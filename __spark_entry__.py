@@ -2887,77 +2887,39 @@ def _q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Registration order is a CONTRACT: the driver's correctness gate
-# checks exactly the FIRST 50 entries.  The window is packed so every
-# operator family has a driver-hashed representative — panel queries
-# (set_ops_panel, join_variants_panel, dashboard_tiles,
-# dashboard_slicer_panel, ingest_roundtrip_panel, doc_profile) stack
-# several operators under one hash, and single-operator twins the
-# panels subsume are registered PAST the window (still oracled; run
-# `python scripts/check_oracle.py` to verify the full surface).
+# Registration order is a CONTRACT.  The first 50 entries are the
+# driver's hash window: its correctness gate checks exactly those, so
+# the window holds one hash-twinned representative per operator family
+# (panel entries such as join_variants_panel, ingest_roundtrip_panel
+# and doc_profile stack several operators under one hash).  Rows-only
+# entries (no DuckDB twin) and the single-operator twins the panels
+# subsume stay past the window; they are still oracled by
+# `python scripts/check_oracle.py`, which covers every entry.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # ==== r16 driver window (first 50) =========================
-    # r16 is an OPTIMIZATION round: the window is the r15 window with
-    # exactly ONE swap, the r15 verdict's #1 — the two rows-only PQ
-    # entries (vec_filtered_ann_pq, stream_pq_index_ingest), which the
-    # driver can only record as `no_oracle`, rotate back past-window
-    # per the standing rows-only policy (their one mandated in-window
-    # appearance happened in r15; the r15 verdict notes their r16
-    # reappearance in `queries_dropped` is rotation, not a drop), and
-    # two hash-twinned r16 due-backs take their slots —
-    # vec_filtered_ann (same filtered-ANN family, full driver hash)
-    # and stream_chi2_monitor (streaming-monitor family, full driver
-    # hash).  Everything else holds so the optimization round's
-    # correctness comparison stays window-stable.  Remaining r16
-    # due-backs (vec_ann_recall_profile, doc_bm25_prf_topk,
-    # vec_mmr_rerank_batch + the 21 third-hash r13-outs) queue for
-    # the r17 rotation alongside the r15-outs.
-    # ---- r15 ledger (unchanged otherwise) ----
-    # r15 rotation: 19 two-round-green family anchors kept; the 5 r14
-    # first-hash entries held for their SECOND in-window round; the 17
-    # remaining r13-outs due back; first driver checks for
-    # corpus_freeze_stats/corpus_freeze_delta (twinned, both green
-    # r15); first hashes for the three new r15 entries
-    # (corpus_freeze_audit, vocab_bpe_merges, corpus_cluster_balance);
-    # 2 pulled-forward r16 due-backs (vec_filtered_topk,
-    # doc_prf_expansion).  Due back r17: the r15-outs
-    # (stream_ann_index_ingest, vec_dedup_delta,
-    # catalog_persistent_roundtrip, the 16 r14 due-backs, the 7 r14
-    # pulled-forwards).
-    # ---- 2-round-green family anchors (kept in-window) ----
-    # core parity: flagship + master chain; pushdown contract;
-    # join surface panel; SQL-string surface
     "flagship_category_distribution": _q_flagship,
     "master_table": _q_master_table,
     "filter_pushdown": _q_filter_pushdown,
     "join_variants_panel": _q_join_variants_panel,
     "sql_revenue_by_nation": _sql_query(_SQL_REVENUE),
-    # dashboard/window family: metrics + slicer panels, pct-share
     "dashboard_metrics_panel": _q_dashboard_metrics_panel,
     "dashboard_slicer_panel": analytics.slicer_panel,
     "window_trend_panel": analytics.pct_share_window,
-    # streaming core panels + ingest surface
     "stream_windows_panel": _q_stream_windows_panel,
     "stream_joins_panel": _q_stream_joins_panel,
     "ingest_roundtrip_panel": _q_ingest_roundtrip_panel,
-    # events analytics + sessionization; CDC via SCD2 history
     "events_analytics_panel": _q_events_analytics_panel,
     "events_sessionize": _q_sessionize,
     "cdc_scd2_history": _q_cdc_scd2_history,
-    # LLM-pipeline anchors: clean pipeline composition, LSH near-dup,
-    # CC panel, doc profile, ANN contract
     "corpus_clean_pipeline": llm_queries.corpus_clean_pipeline,
     "doc_near_dup_banded": llm_queries.doc_near_dup_banded,
     "doc_dup_clusters_panel": llm_queries.doc_dup_clusters_panel,
     "doc_profile": llm_queries.doc_profile,
     "vec_ann_exhaustive_equiv": llm_queries.vec_ann_exhaustive_equiv,
-    # ---- r14 first-hash entries: SECOND in-window round ----
     "orders_retention_delete": _q_retention_delete,
     "vec_ivf_index_compacted": llm_queries.vec_ivf_index_compacted,
     "vec_index_forget": llm_queries.vec_index_forget,
     "ingest_schema_evolution": _q_ingest_schema_evolution,
     "corpus_training_freeze": llm_queries.corpus_training_freeze,
-    # ---- r15 due-backs (the 17 remaining r13-outs) ----
     "cdc_latest_state": _q_cdc_latest_state,
     "corpus_semantic_dedup": llm_queries.corpus_semantic_dedup,
     "doc_text_panel": _q_doc_text_panel,
@@ -2975,49 +2937,21 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "vec_top_k_ann_ivf": llm_queries.vec_top_k_ann_ivf,
     "vec_top_k_ann_signlsh": llm_queries.vec_top_k_ann_signlsh,
     "vec_top_k_bruteforce": llm_queries.vec_top_k_bruteforce,
-    # ---- r15 first-checks kept (both hashed green r15) ----
-    # freeze accounting over the nested freeze twin (r15: collapsed
-    # to one grouped melt pass, 24 planned shuffles)
     "corpus_freeze_stats": llm_queries.corpus_freeze_stats,
-    # incremental freeze admission: delta batch vs the frozen corpus
     "corpus_freeze_delta": llm_queries.corpus_freeze_delta,
-    # ---- r16 swap-ins (the r15 verdict's #1): hash-twinned
-    # due-backs replacing the two rows-only PQ entries ----
-    # filtered ANN over the persisted RAW IVF index (full driver
-    # hash; the PQ variant is past-window rows-only by policy)
     "vec_filtered_ann": llm_queries.vec_filtered_ann,
-    # streaming χ² category-mix monitor (full driver hash; the
-    # streaming-index PQ ingest is past-window rows-only by policy)
     "stream_chi2_monitor": _q_stream_chi2_monitor,
-    # ---- first window hashes: new r15 entries ----
-    # per-stage drop attribution + overlap matrix over the freeze
-    # admission chain (tagged anti-join legs)
     "corpus_freeze_audit": llm_queries.corpus_freeze_audit,
-    # distributed BPE pair-merge training: K unrolled rounds,
-    # deterministic ties, merge table + coverage trajectory
     "vocab_bpe_merges": llm_queries.vocab_bpe_merges,
-    # semantic cluster-balanced curation (frozen-seed centroids +
-    # even token-mass mixture; optional freeze stage)
     "corpus_cluster_balance": llm_queries.corpus_cluster_balance,
-    # ---- pulled-forward r16 due-backs (slots 49-50) ----
     "vec_filtered_topk": llm_queries.vec_filtered_topk,
     "doc_prf_expansion": llm_queries.doc_prf_expansion,
-    # ==== driver window ends here (entry 50) ====================
-    # Everything below is equally oracled but past the driver cap;
-    # scripts/check_oracle.py covers it in the full local gate.
-    # Rotation ledger: r4-r13 history in git (this block is
-    # regenerated each round; see the window comment above for the
-    # due-back schedule).
-    # ---- past-window residents ----
-    # rotated out r16 (rows-only production-dial PQ class — the
-    # standing policy; first driver rows-checks recorded r15)
+    # ---- driver window ends here (entry 50) ----
     "vec_filtered_ann_pq": llm_queries.vec_filtered_ann_pq,
     "stream_pq_index_ingest": _q_stream_pq_index_ingest,
-    # rotated out r15 (2-round green; due back r17)
     "stream_ann_index_ingest": _q_stream_ann_index_ingest,
     "vec_dedup_delta": llm_queries.vec_dedup_delta,
     "catalog_persistent_roundtrip": _q_catalog_persistent_roundtrip,
-    # rotated out r15 (r14 due-backs, third hash; due back r17)
     "set_ops_panel": _q_set_ops_panel,
     "events_time_decay_profile": _q_events_time_decay,
     "doc_prefix_contained": llm_queries.doc_prefix_contained,
@@ -3034,7 +2968,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "doc_tfidf_top_terms": llm_queries.doc_tfidf_top_terms,
     "vec_cosine_near_dup": llm_queries.vec_cosine_near_dup,
     "doc_band_bucket_profile": llm_queries.doc_band_bucket_profile,
-    # rotated out r15 (r14 pulled-forwards, hashed r14; due back r17)
     "doc_bm25_topk": llm_queries.doc_bm25_topk,
     "doc_hybrid_search_rrf": llm_queries.doc_hybrid_search_rrf,
     "vec_mmr_rerank": llm_queries.vec_mmr_rerank,
@@ -3042,8 +2975,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "doc_graph_kcore": llm_queries.doc_graph_kcore,
     "stream_psi_monitor": _q_stream_psi_monitor,
     "events_psi_drift": _q_events_psi_drift,
-    # (stream_chi2_monitor and vec_filtered_ann moved IN-window r16 —
-    # the rows-only-PQ swap above)
     "vec_ann_recall_profile": llm_queries.vec_ann_recall_profile,
     "doc_bm25_prf_topk": llm_queries.doc_bm25_prf_topk,
     "vec_mmr_rerank_batch": llm_queries.vec_mmr_rerank_batch,
@@ -3068,22 +2999,14 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_line_dedup_ingest": _q_stream_line_dedup_ingest,
     "doc_unicode_normalized": llm_queries.doc_unicode_normalized,
     "master_table_partitioned_roundtrip": _q_master_partitioned_roundtrip,
-    # r15: apply the learned BPE merges — per-doc encoding effect
-    # (train/apply pair with vocab_bpe_merges)
     "vocab_bpe_encode": llm_queries.vocab_bpe_encode,
-    # r15: the cluster-balanced freeze end-to-end (optional
-    # balance="cluster" stage live through shuffle-shard + packing)
     "corpus_freeze_clustered": llm_queries.corpus_freeze_clustered,
     "stateful_running_profile": _q_stateful_profile,
     "stream_doc_dedup_ingest": _q_stream_doc_dedup_ingest,
     "vec_quantize_pq": llm_queries.vec_quantize_pq,
     "vec_top_k_ann_ivf_kmeans": llm_queries.vec_top_k_ann_ivf_kmeans,
     "vec_top_k_ann_ivfpq": llm_queries.vec_top_k_ann_ivfpq,
-    # r12: persisted IVF-PQ serving index (codes-per-cell + id-fetch
-    # re-rank; rows-only like the in-memory PQ entries)
     "vec_ivfpq_index_search": llm_queries.vec_ivfpq_index_search,
-    # r12: recall-vs-rerank curve for the compressed (PQ) index —
-    # rows-only leg class, monotone + exhaustive-endpoint pinned
     "vec_ann_recall_profile_pq": llm_queries.vec_ann_recall_profile_pq,
     "dashboard_pivot_priority": _q_pivot,
     "events_asof_join": _q_asof_join,

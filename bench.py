@@ -11,10 +11,19 @@ reported figure is the per-query MEDIAN — single-run timings swung
 ±20-30% round-to-round (codegen warmup on first invocation, GC
 timing) and masqueraded as regressions.  ``runs`` and the raw
 per-query samples ship in the JSON so outliers stay diagnosable.
+
+Named entries and ``--conf k=v`` session overrides give a same-session
+A/B under the same timing discipline::
+
+    python bench.py q1 q2 --conf spark.sql.shuffle.partitions=8
+
+Only the named entries run (at ``$SPARK_GRAFT_SF_DIR``, no small
+tier) and the record echoes each override as the session reports it.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -251,17 +260,37 @@ def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
+def selection(names) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    """(entries timed at the headline scale, entries timed at the small
+    scale): the named entries alone, or HEADLINE + SMALL_TIER."""
+    return (tuple(names), ()) if names else (HEADLINE, SMALL_TIER)
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description="Time engine entries; print one JSON line.")
+    ap.add_argument("names", nargs="*", help="entries to time (default: HEADLINE + SMALL_TIER)")
+    ap.add_argument("--conf", action="append", default=[], metavar="K=V",
+                    help="session config override, repeatable")
+    args = ap.parse_args(argv)
+    queries = entrymod.queries()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        ap.error(f"unknown entries: {', '.join(unknown)}")
+    bad = [kv for kv in args.conf if "=" not in kv]
+    if bad:
+        ap.error(f"--conf expects K=V, got: {', '.join(bad)}")
+    conf = dict(kv.split("=", 1) for kv in args.conf)
+    names, small = selection(args.names)
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("bench")
+    spark = get_spark("bench", extra_conf=conf)
 
     # warmup: spin the JVM + parquet reader once, not billed to queries
     load_table(spark, sf_dir, "nation").count()
 
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 
-    queries = entrymod.queries()
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
     def _time(names, at_dir) -> dict[str, list[float]]:
@@ -286,35 +315,31 @@ def main() -> None:
                 spark.range(1).count()  # settle barrier before next timing
         return out
 
-    samples = _time(HEADLINE, sf_dir)
-    small_dir = os.environ.get(
-        "SPARK_GRAFT_SMALL_SF_DIR", "/root/testdata/sf0.01"
-    )
-    small_samples = _time(SMALL_TIER, small_dir)
-
+    samples = _time(names, sf_dir)
     timings = {
         name: round(statistics.median(vals), 3) for name, vals in samples.items()
     }
-    small_timings = {
-        name: round(statistics.median(vals), 3)
-        for name, vals in small_samples.items()
+    record = {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "runs": runs,
+        "samples": samples,
     }
-    total = round(sum(timings.values()), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "runs": runs,
-                "samples": samples,
-                "small_tier_sf": small_dir.rstrip("/").rsplit("sf", 1)[-1],
-                "small_tier": small_timings,
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            }
+    if small:
+        small_dir = os.environ.get(
+            "SPARK_GRAFT_SMALL_SF_DIR", "/root/testdata/sf0.01"
         )
-    )
+        record["small_tier_sf"] = small_dir.rstrip("/").rsplit("sf", 1)[-1]
+        record["small_tier"] = {
+            name: round(statistics.median(vals), 3)
+            for name, vals in _time(small, small_dir).items()
+        }
+    record["sf"] = float(sf) if sf.replace(".", "").isdigit() else sf
+    if conf:
+        record["conf"] = {k: spark.conf.get(k) for k in conf}
+    print(json.dumps(record))
 
 
 if __name__ == "__main__":

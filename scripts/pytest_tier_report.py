@@ -7,7 +7,12 @@ Usage: python scripts/pytest_tier_report.py pytest_r16_durations.log [budget_sec
 
 ``--manifest`` regenerates tests/slow_manifest.txt: every node id
 whose measured call time is >= thr_sec (default 1.75) enters the slow
-tier (see tests/conftest.py::pytest_collection_modifyitems).
+tier (see tests/conftest.py::pytest_collection_modifyitems).  It
+refuses a log that lacks any node id the current manifest lists: a
+log captured under the default ``-m "not slow"`` selection holds no
+slow test, and rebuilding from it would drop every slow test back
+into the budgeted tier.  Capture the log with
+``python -m pytest tests/ -m "slow or not slow" --durations=0``.
 
 Prints per-file total seconds (sorted desc), the cumulative share,
 and the suggested `slow` file set: the smallest set of files whose
@@ -24,15 +29,27 @@ from collections import defaultdict
 
 
 def _write_manifest(path: str, thr: float) -> None:
-    pat = re.compile(r"^\s*([0-9.]+)s\s+call\s+(tests/\S+)")
-    rows = []
+    pat = re.compile(r"^\s*([0-9.]+)s\s+(call|setup|teardown)\s+(tests/\S+)")
+    rows, seen = [], set()
     for line in open(path):
         m = pat.match(line)
         if m:
-            rows.append((float(m.group(1)), m.group(2)))
+            seen.add(m.group(3))
+            if m.group(2) == "call":
+                rows.append((float(m.group(1)), m.group(3)))
+    out = "tests/slow_manifest.txt"
+    with open(out) as f:
+        listed = [ln.strip() for ln in f if ln.strip() and not ln.startswith("#")]
+    missing = [n for n in listed if n not in seen]
+    if missing:
+        sys.exit(
+            f"refusing to rewrite {out}: {path} lacks {len(missing)} of its "
+            f"{len(listed)} node ids (first: {missing[0]}). The log was "
+            "likely captured under the default -m 'not slow' selection; "
+            "re-run with -m 'slow or not slow' --durations=0."
+        )
     slow = sorted(n for s, n in rows if s >= thr)
     kept = sum(s for s, n in rows if s < thr)
-    out = "tests/slow_manifest.txt"
     with open(out, "w") as f:
         f.write("# Slow-tier manifest (r16, the r15 verdict's #2).\n")
         f.write(f"# Node ids with call time >= {thr} s in {path}.\n")

@@ -12,7 +12,7 @@ manufactures user-adjacent pairs separated by EXACTLY the 30-minute
 session gap, and appends same-timestamp duplicate rows under fresh
 event ids.
 
-The exploration run (scripts/probe_boundary_ties.py) found ONE real
+The exploration run (scripts/probe_boundary_ties.py at c84e9fc) found ONE real
 defect: ``events_asof_join`` diverged under same-instant duplicate
 quotes — the Spark operator collapses duplicate (by, on) right rows
 to the greatest payload (its documented ``dedup_right`` contract),

@@ -1,5 +1,5 @@
 """Catalog name-collision pins (r8 probe class,
-scripts/probe_catalog_collisions.py).
+scripts/probe_catalog_collisions.py at c84e9fc).
 
 The session catalog is ONE case-insensitive namespace per database,
 shadowed by session temp views.  The exploration run found

@@ -8,7 +8,7 @@ last-DELIVERED-wins by contract (pinned below); the version-guarded
 path (``upsert_by_key(version_col=...)`` / ``stream_merge_to_parquet
 (version_col=...)`` → ``latest_version_rows``) must converge to the
 per-key latest-VERSION state under any schedule.  Probe twin:
-scripts/probe_cdc_replay.py.
+scripts/probe_cdc_replay.py at c84e9fc.
 """
 
 from __future__ import annotations

@@ -1,5 +1,5 @@
 """Concurrent-writer partition pins (r8 probe class,
-scripts/probe_concurrent_writers.py).
+scripts/probe_concurrent_writers.py at c84e9fc).
 
 Contract (writers.py): concurrent publishers into one parquet table
 use DYNAMIC partition overwrite over DISJOINT partitions — dynamic

@@ -2,8 +2,8 @@
 (round 8 — extra injection class).
 
 Scraped corpora carry every byte UTF-8 allows.  The exploration run
-(scripts/probe_control_chars.py) failed NINE text entries on one root
-cause: **Java's ``\\s`` includes ``\\x0B`` (vertical tab), RE2's does
+(scripts/probe_control_chars.py at c84e9fc) failed NINE text entries on
+one root cause: **Java's ``\\s`` includes ``\\x0B`` (vertical tab), RE2's does
 not** — so a VT-bearing doc tokenized differently per engine and the
 divergence propagated through token counts, chunks, fingerprints,
 shingle TF-IDF, repetition, decontamination, and the clean pipeline.

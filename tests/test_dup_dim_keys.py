@@ -11,7 +11,7 @@ with a MUTATED attribute value (so collapsing duplicates in only one
 engine changes values, not just counts) for a hash-chosen key slice
 of nation/customer/part/supplier.
 
-The exploration run (scripts/probe_dup_dim_keys.py) found all 24
+The exploration run (scripts/probe_dup_dim_keys.py at c84e9fc) found all 24
 join-family entries already agree; this suite pins that.
 """
 

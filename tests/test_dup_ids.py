@@ -4,7 +4,7 @@
 Every dedup/CDC survivor pick tie-breaks on the table's id column,
 which the clean fixtures guarantee unique.  Real data does not:
 replayed loads duplicate ids, and NULL ids appear after bad joins.
-The exploration run (scripts/probe_dup_ids.py) found TWO real
+The exploration run (scripts/probe_dup_ids.py at c84e9fc) found TWO real
 defects, both fixed and pinned here:
 
 - ``doc_pack_bins``: NULL doc_ids silently fell out of the Spark plan
@@ -53,7 +53,7 @@ ENTRIES = [
     # and the matview's delivery split — a bare pmod(event_id, 3)
     # wave predicate silently never delivered NULL-id events while
     # the full-recompute oracle counted them (fixed: coalesce(..., 0)
-    # keeps the split total; scripts/probe_cdc_replay.py)
+    # keeps the split total; scripts/probe_cdc_replay.py at c84e9fc)
     "cdc_out_of_order_merge",
     "stream_incremental_matview",
     "dedup_keyed_deterministic",

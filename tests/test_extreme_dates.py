@@ -18,7 +18,7 @@ references the column.  Divergence candidates this pins:
   historically);
 - year-boundary day-of-week cycle arithmetic (0001-01-01).
 
-Exploration run: scripts/probe_extreme_dates.py — all 10 twins
+Exploration run: scripts/probe_extreme_dates.py at c84e9fc — all 10 twins
 agreed; this suite pins that agreement.
 """
 

@@ -1,7 +1,7 @@
 """Extreme-magnitude injection: corrupt count metadata + oversized
 documents (round 8 — extra injection class).
 
-The exploration run (scripts/probe_extreme_magnitudes.py, 21k-token
+The exploration run (scripts/probe_extreme_magnitudes.py at c84e9fc, 21k-token
 giant doc) found ONE real defect: ``pipeline_split_panel`` JOB-ABORTED
 on Spark (ANSI ARITHMETIC_OVERFLOW — two corrupt 5e18 ``n_chars`` rows
 overflow any BIGINT sum) while DuckDB silently promoted to HUGEINT —

@@ -10,7 +10,7 @@ twins through the driver-gate comparator.  These are exactly the
 shapes where "character" semantics fork: an engine that counts or
 slices GRAPHEME CLUSTERS disagrees with one that counts CODE POINTS.
 
-Primitive census (scripts/probe_grapheme.py): Spark and DuckDB agree
+Primitive census (scripts/probe_grapheme.py at c84e9fc): Spark and DuckDB agree
 on ``length``/``substring``/``upper``/``lower`` (both code-point
 based) but DIVERGE on ``reverse`` — DuckDB reverses grapheme clusters
 (a ZWJ family survives intact), Spark reverses code points (the ZWJ

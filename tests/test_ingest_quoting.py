@@ -3,7 +3,7 @@ round-trips (round 8 — extra injection class).
 
 The round-trip entries prove losslessness against the ORIGINAL
 parquet, but the clean fixtures never exercise the quoting machinery.
-The exploration run (scripts/probe_ingest_quoting.py) found the CSV
+The exploration run (scripts/probe_ingest_quoting.py at c84e9fc) found the CSV
 leg LOSSY two ways, both fixed and pinned here:
 
 - embedded newlines in quoted fields SPLIT ROWS on read —

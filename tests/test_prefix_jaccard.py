@@ -227,10 +227,11 @@ def test_auto_picks_base_on_rare_shingle_corpus(spark):
 
 
 def test_auto_mitigates_viral_shingle_under_the_df_cap(spark):
-    """The viral-shingle cliff (scripts/measure_viral_shingle.py): one
-    shingle in ~90% of docs, with df UNDER max_df, floods the base
-    join with df² candidates from that single posting list (measured
-    489,530 of which 559 survive prefix filtering at 1000 docs).  The
+    """The viral-shingle cliff
+    (scripts/measure_viral_shingle.py at c84e9fc): one shingle in ~90%
+    of docs, with df UNDER max_df, floods the base join with df²
+    candidates from that single posting list (measured 489,530 of which
+    559 survive prefix filtering at 1000 docs).  The
     profile must see that mass and pick the prefix plan — where the
     globally-commonest shingle enters almost no rarest-first prefix —
     and the result must equal the base plan's."""

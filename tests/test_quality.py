@@ -266,7 +266,7 @@ class TestPiiAdversarialGuard:
         """The contains pre-filter must survive into the optimized
         plan — without it Java's backtracking regex is quadratic in
         unbroken class runs (measured 2.6 s/cell at 24k chars;
-        scripts/measure_regex_adversarial.py)."""
+        scripts/measure_regex_adversarial.py at c84e9fc)."""
         df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
         plan = (
             lq.redact_pii(df)

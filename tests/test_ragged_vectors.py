@@ -4,7 +4,7 @@ twins (round 8 — extra injection class beyond the three VERDICT asks).
 The r7 non-finite campaign covered NaN/Inf/NULL COMPONENTS inside
 well-shaped 64-dim vectors; this class covers malformed SHAPES real
 embedding pipelines emit.  The exploration run
-(scripts/probe_ragged_vectors.py) failed ALL TEN vector entries:
+(scripts/probe_ragged_vectors.py at c84e9fc) failed ALL TEN vector entries:
 
 - zero-norm vectors (failed encoder batch) → ANSI DIVIDE_BY_ZERO
   job-aborts in the cosine (llm/vectors.py:196/:406);

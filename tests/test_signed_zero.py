@@ -11,7 +11,7 @@ Python's ``==`` does NOT, which made the local gate blind to the
 class until ``check_oracle._normalize`` learned to encode the sign
 bit (pinned in tests/test_check_oracle.py).
 
-The exploration run (scripts/probe_signed_zero.py) found EIGHT
+The exploration run (scripts/probe_signed_zero.py at c84e9fc) found EIGHT
 diverging twins — every rounded sum/avg/min/max/lerp column fed a
 tiny negative: stats profile, OHLC (batch + streaming), analytics
 panel, sessionize, interpolate join, both stream window count twins.

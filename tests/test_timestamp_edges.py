@@ -11,7 +11,7 @@ negative, pre-Gregorian-reform-adjacent era) and plants rows exactly
 AT the epoch origin and ±1 µs around it, then replays the event-time
 twins through the driver-gate comparator.
 
-The exploration run (scripts/probe_timestamp_edges.py) found all 20
+The exploration run (scripts/probe_timestamp_edges.py at c84e9fc) found all 20
 event-time entries already agree — both engines floor their window
 buckets and truncate negative nanos identically (see
 tests/test_readers.py negative-nanos pin) — so this suite pins that

@@ -4,7 +4,7 @@
 Primitive recon found two real cross-engine casefold divergences —
 ``upper('ß')`` (Java 'SS' vs utf8proc 'ẞ') and ``lower('İ')`` (Java
 'i'+U+0307 vs utf8proc bare 'i') — and the exploration run
-(scripts/probe_unicode_edges.py) caught ``doc_normalized_dedup``
+(scripts/probe_unicode_edges.py at c84e9fc) caught ``doc_normalized_dedup``
 hashing different norm keys per engine on Turkish-İ text.  The fix
 (strip ``\\p{Mn}`` after lower in BOTH engines) is pinned here, along
 with agreement of every text-key twin under: literal NFC/NFD twin

@@ -172,7 +172,8 @@ def near_dup_pairs_banded(
 
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
 
-    **Degenerate-clique regime** (measured, scripts/measure_lsh_clique.py):
+    **Degenerate-clique regime** (measured,
+    scripts/measure_lsh_clique.py at c84e9fc):
     within-bucket work is Σ bucket², so a boilerplate-heavy corpus
     where a large fraction of docs is ONE near-dup clique (same
     template, tiny edits — exact-dedup-proof) degrades to clique²
@@ -637,7 +638,7 @@ def ngram_jaccard_pairs_prefix(
     plain posting join pays Σ df² over ALL retained shingles, the
     prefix join only over prefix postings — at t=0.5 half of each
     document's shingles (the commonest half) never enter the join
-    (``scripts/measure_prefix_jaccard.py``: 90.9% fewer candidates
+    (``scripts/measure_prefix_jaccard.py`` at c84e9fc: 90.9% fewer candidates
     and a faster wall on a Zipf-ish corpus).  The trade is two fixed
     extra passes (the per-doc ranking window and the candidate-verify
     joins), so on corpora where Σ df² is already small — low
@@ -799,7 +800,7 @@ def ngram_jaccard_pairs_auto(
     the margin that pays for the prefix plan's two fixed extra passes
     (the per-doc ranking window and the candidate-verify joins).
 
-    Measured (scripts/measure_prefix_jaccard.py, local[32]): the
+    Measured (scripts/measure_prefix_jaccard.py at c84e9fc, local[32]): the
     profile's predictions are EXACT — on the Zipf-ish favorable corpus
     (3000 docs, vocab 50, t=0.5) predicted = measured 1,004,428 vs
     91,356 candidates (an 11.0× cut → prefix chosen); on a
@@ -826,7 +827,7 @@ def ngram_jaccard_pairs_auto(
     ~(1−t) of postings → estimate the cut as f²) is defeated by the
     viral-shingle regime, where f ≈ 0.77 yet the true cut is ~875×
     because the rare-first prefix excludes exactly the shingle owning
-    the df² mass (scripts/measure_viral_shingle.py).  Callers that
+    the df² mass (scripts/measure_viral_shingle.py at c84e9fc).  Callers that
     know their regime call the base/prefix operator directly.
 
     r16 opt (guide §2.4): the retained ``(__s, __df)`` aggregate is

@@ -107,11 +107,12 @@ def pagerank(
     # rows, and materializing them at the session's shuffle width (=
     # core count locally) makes every round a fan of near-empty tasks
     # whose scheduling dominates — measured 6.0 s at 32 cores vs 3.4 s
-    # at 8 for the SAME 256-edge graph (scripts/
-    # measure_round_overhead.py).  ``coalesce`` (never repartition: no
-    # extra shuffle) caps the materialized width at ~2M edges per
-    # partition, floor 1, ceiling the cluster parallelism — at 100 TB
-    # the count grows with the graph and this is a no-op.  The count
+    # at 8 for the SAME 256-edge graph
+    # (scripts/measure_round_overhead.py at c84e9fc).  ``coalesce``
+    # (never repartition: no extra shuffle) caps the materialized
+    # width at ~2M edges per partition, floor 1, ceiling the cluster
+    # parallelism — at 100 TB the count grows with the graph and this
+    # is a no-op.  The count
     # itself is a bounded job over the already-materialized checkpoint.
     n_edges = base.count()
     sc = pairs.sparkSession.sparkContext
@@ -264,7 +265,7 @@ def triangle_counts(
     hub edge points INTO it, since the hub out-ranks its neighbors by
     degree), where a naive id-ordered orientation pays up to d²/4
     wedges when the hub's id falls mid-range (measured:
-    scripts/measure_triangle_skew.py).  Σ out-deg² under degree
+    scripts/measure_triangle_skew.py at c84e9fc).  Σ out-deg² under degree
     orientation is O(E^1.5) on any graph — the classic bound.
     Triangles credit all three corners via one explode + partial-agg
     pass; degrees fold on as in :func:`pagerank`.  Clustering =

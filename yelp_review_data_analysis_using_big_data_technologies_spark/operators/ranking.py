@@ -24,7 +24,7 @@ window formulation both in unit tests and the DuckDB oracle twin.
 NULL order values rank LAST (both engines' default for the
 directions used here), as one tie group.
 
-Measured (scripts/measure_distributed_rank.py, 20M rows, one key
+Measured (scripts/measure_distributed_rank.py at c84e9fc, 20M rows, one key
 holding ~90% of them, 10k-distinct value domain, local[32]): naive
 window rank 45.6/50.9 s vs two-level 6.5/6.0 s — **8.5×**, and the
 gap widens with the hot key because the naive form's bottleneck is

@@ -1929,7 +1929,7 @@ def vec_ann_recall_profile_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     are trained ONCE (:func:`llm.vectors.train_ivfpq_params`, both
     bounded local relations) and passed to every leg instead of each
     leg re-training the identical quantizer.  Measured honestly
-    (scripts/bench_isolated.py, 4 runs each): locally ≈ NEUTRAL
+    (scripts/bench_isolated.py at c84e9fc, 4 runs each): locally ≈ NEUTRAL
     (12.5 s vs 12.8 s median — the trainings are cheap driver fits;
     ADC scoring + the bruteforce truth joins dominate), kept for the
     single-training cleanliness.  The persisted build-once form was

@@ -110,7 +110,7 @@ def overwrite_partitions_dynamic(
     nothing coordinates who wins).  Never have two applications
     APPEND to a shared root instead: append stages under the shared
     ``<root>/_temporary/0`` and the first commit deletes the other
-    writer's staged files (scripts/probe_concurrent_writers.py
+    writer's staged files (scripts/probe_concurrent_writers.py at c84e9fc
     demonstrates the loss)."""
     _validate_path(path)
     spark = df.sparkSession

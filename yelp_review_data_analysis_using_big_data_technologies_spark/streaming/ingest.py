@@ -144,7 +144,7 @@ def stream_dedup_ingest_to_parquet(
     partitions mirror the corpus partitions (per-batch overwrite →
     same idempotent-replay guarantee).
 
-    Mode selection (measured, scripts/measure_ingest_crossover.py,
+    Mode selection (measured, scripts/measure_ingest_crossover.py at c84e9fc,
     8-token docs / 2k-doc deltas): per-delta-batch cost crosses over
     at a corpus of O(2×10⁴) docs — even at 20k (≈3.9 s both), indexed
     wins 5.5→4.7 s at 100k and 14.5→4.7 s (3.1×) at 10⁶ after the r6
@@ -610,7 +610,7 @@ def stream_line_dedup_to_parquet(
     accumulated KEPT-line count — for a long-lived stream the same
     persisted side-index upgrade the doc-level ingest implements
     (``index_path``; crossover measured in
-    scripts/measure_ingest_crossover.py) applies verbatim: append
+    scripts/measure_ingest_crossover.py at c84e9fc) applies verbatim: append
     each batch's new line hashes to an index table and anti-join
     that instead.  Documented upgrade path, same admitted output."""
     from pyspark.errors import AnalysisException
