@@ -31,6 +31,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.plans.master_ta
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import (
     load_table,
     register_views,
+    scratch_dir,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import (
     SESSIONIZE_SQL as _SESSIONIZE_ORACLE,
@@ -864,27 +865,13 @@ def _q_shingle_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _roundtrip_stage_dir(kind: str, sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_{kind}_stage",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-
-
 def _stage_waves(base: str, waves) -> str:
     """Write each frame in ``waves`` as one single-file parquet wave
     under ``{base}/src`` with STRICTLY INCREASING mtimes — the file
     streaming source lists oldest-first, so the mtimes pin the
-    micro-batch order.  The shared staging for every multi-wave
-    streaming entry (dedup ingest, incremental matview): the
-    coalesce(1)-write → part-file move → utime sequence is subtle
-    enough that two copies would drift."""
+    micro-batch order.  The coalesce(1)-write → part-file move → utime
+    sequence is subtle enough that two copies would drift."""
     import glob
-    import os
     import shutil
 
     src = os.path.join(base, "src")
@@ -899,6 +886,40 @@ def _stage_waves(base: str, waves) -> str:
     return src
 
 
+def _wave_stream(
+    spark: SparkSession, name: str, sf_dir: str, waves
+) -> tuple[str, DataFrame]:
+    """The shared source of every multi-wave streaming entry: stage
+    ``waves`` under the entry's scratch dir (``sources.readers
+    .scratch_dir``) and open a file stream that replays them one wave
+    per micro-batch, in order.  Returns ``(base, stream)``; staging
+    wipes ``base`` first, so the checkpoints, tables and indexes an
+    entry keeps under it start fresh on every run."""
+    base = scratch_dir(name, sf_dir)
+    src = _stage_waves(base, waves)
+    stream = (
+        spark.readStream.schema(waves[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    return base, stream
+
+
+def _id_waves(df: DataFrame, id_col: str, splits: tuple[int, ...]) -> list:
+    """``df`` cut into consecutive ``id_col`` ranges at ``splits``:
+    wave 0 holds ids below ``splits[0]``, the last wave the rest."""
+    bounds = [None, *splits, None]
+    waves = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        wave = df
+        if lo is not None:
+            wave = wave.filter(F.col(id_col) >= lo)
+        if hi is not None:
+            wave = wave.filter(F.col(id_col) < hi)
+        waves.append(wave)
+    return waves
+
+
 def _staged_json_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage ``documents`` out as JSON-lines and re-read with the
     explicit schema — THE shared JSON round-trip leg (single entry and
@@ -908,7 +929,7 @@ def _staged_json_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_json
 
     docs = load_table(spark, sf_dir, "documents")
-    stage = _roundtrip_stage_dir("json", sf_dir)
+    stage = scratch_dir("json_stage", sf_dir)
     write_json(docs, stage)
     return read_json(spark, stage, schema=docs.schema)
 
@@ -920,7 +941,7 @@ def _staged_csv_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_csv
 
     nation = load_table(spark, sf_dir, "nation")
-    stage = _roundtrip_stage_dir("csv", sf_dir)
+    stage = scratch_dir("csv_stage", sf_dir)
     write_csv(nation, stage, header=True)
     return read_csv(spark, stage, schema=nation.schema, header=True)
 
@@ -932,7 +953,7 @@ def _staged_orc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_orc
 
     orders = load_table(spark, sf_dir, "orders")
-    stage = _roundtrip_stage_dir("orc", sf_dir)
+    stage = scratch_dir("orc_stage", sf_dir)
     write_orc(orders, stage, partition_by=["o_orderpriority"])
     return read_orc(spark, stage)
 
@@ -1355,38 +1376,17 @@ def _q_stream_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (:func:`streaming.ingest.line_dedup_ingest_sql`) — the hash
     covers sequential state, the short-line exemption, and
     reassembly order."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_line_dedup_to_parquet,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_line_dedup_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    base, stream = _wave_stream(
+        spark, "line_dedup_ingest", sf_dir,
+        _id_waves(docs, "doc_id", _INGEST_SPLITS),
     )
     table = os.path.join(base, "corpus")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["doc_id", "text"]
-    bounds = [None, *_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_INGEST_SPLITS) + 1):
-        wave = docs.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("doc_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("doc_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(docs.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_line_dedup_to_parquet(stream, table, ckpt)
+    stream_line_dedup_to_parquet(stream, table, os.path.join(base, "ckpt"))
     return spark.read.parquet(table).select(
         F.col("ingest_batch").cast("int").alias("ingest_batch"),
         "doc_id",
@@ -1410,9 +1410,6 @@ def _q_stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the SAME static IVF twin as
     ``vec_ivf_index_search``, so the driver hash covers the build,
     three merges, directory pruning, and the search in one entry."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
     from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
         _IVF_CELLS,
@@ -1426,33 +1423,17 @@ def _q_stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _load_embeddings(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_ann_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _wave_stream(
+        spark, "ann_ingest", sf_dir,
+        _id_waves(emb.select("vec_id", "embedding"), "vec_id", _ANN_INGEST_SPLITS),
     )
     idx = os.path.join(base, "index")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["vec_id", "embedding"]
-    bounds = [None, *_ANN_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_ANN_INGEST_SPLITS) + 1):
-        wave = emb.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("vec_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("vec_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)  # rmtree(base) → fresh index/ckpt
-    stream = (
-        spark.readStream.schema(emb.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # r16 opt (guide §2.4): the drain returns the frozen centroids it
     # built/merged with; the post-drain search threads them instead
     # of re-collecting (None falls back to read-from-path)
-    cent = stream_ann_index_ingest(stream, idx, ckpt, n_cells=_IVF_CELLS)
+    cent = stream_ann_index_ingest(
+        stream, idx, os.path.join(base, "ckpt"), n_cells=_IVF_CELLS
+    )
     return lvec.search_ivf_index(
         spark, idx, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
         cent_rows=cent,
@@ -1474,9 +1455,6 @@ def _q_stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     as every production-dial PQ entry); the drained-index ≡ frozen-
     parameter full rebuild and the two-wave crash-replay are pinned
     in tests/test_ivfpq_index.py."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
     from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
         _IVF_CELLS,
@@ -1490,33 +1468,15 @@ def _q_stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _load_embeddings(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_pq_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _wave_stream(
+        spark, "pq_ingest", sf_dir,
+        _id_waves(emb.select("vec_id", "embedding"), "vec_id", _ANN_INGEST_SPLITS),
     )
     idx = os.path.join(base, "index")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["vec_id", "embedding"]
-    bounds = [None, *_ANN_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_ANN_INGEST_SPLITS) + 1):
-        wave = emb.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("vec_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("vec_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)  # rmtree(base) → fresh index/ckpt
-    stream = (
-        spark.readStream.schema(emb.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # r16 opt (guide §2.4): the drain returns the frozen parameters;
     # the post-drain search threads them instead of re-collecting
     cent, codes = stream_pq_index_ingest(
-        stream, idx, ckpt, n_cells=_IVF_CELLS
+        stream, idx, os.path.join(base, "ckpt"), n_cells=_IVF_CELLS
     )
     return lvec.search_ivfpq_index(
         spark, idx, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
@@ -1535,37 +1495,17 @@ def _q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sequential admission with chained CTEs
     (:func:`streaming.ingest.dedup_ingest_sql`), so the hash covers
     ordering, intra-batch dedup, and both anti-join predicates."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_dedup_ingest_to_parquet,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_dedup_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "n_chars"
+    )
+    base, stream = _wave_stream(
+        spark, "dedup_ingest", sf_dir, _id_waves(docs, "doc_id", _INGEST_SPLITS)
     )
     table = os.path.join(base, "corpus")
-    ckpt = os.path.join(base, "ckpt")
-    cols = ["doc_id", "text", "lang", "n_chars"]
-    bounds = [None, *_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_INGEST_SPLITS) + 1):
-        wave = docs.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("doc_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("doc_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(docs.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     # recompute mode — the BACKFILL shape this entry actually is
     # (three waves of one static corpus, delta ≫ accumulated corpus);
     # measured 5.0 s vs 8.9-9.9 s for the indexed mode at sf0.1, where
@@ -1573,7 +1513,7 @@ def _q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (index_path=...) is the long-lived-stream shape (corpus ≫ delta)
     # — admitted set proven identical by the parametrized test in
     # tests/test_streaming.py and this same oracle.
-    stream_dedup_ingest_to_parquet(stream, table, ckpt)
+    stream_dedup_ingest_to_parquet(stream, table, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(table)
         .select(
@@ -1600,39 +1540,21 @@ def _q_stream_doc_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (:func:`streaming.ingest.doc_dedup_ingest_sql`) — no
     chained CTEs.  The hash covers sequential state, the all-seen
     index, intra-batch keep-first, and the NULL-text exemption."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
         stream_doc_dedup_to_parquet,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_doc_dedup_ingest",
-        os.path.basename(os.path.normpath(sf_dir)),
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "n_chars"
+    )
+    base, stream = _wave_stream(
+        spark, "doc_dedup_ingest", sf_dir,
+        _id_waves(docs, "doc_id", _INGEST_SPLITS),
     )
     table = os.path.join(base, "corpus")
-    ckpt = os.path.join(base, "ckpt")
-    index = os.path.join(base, "index")
-    cols = ["doc_id", "text", "lang", "n_chars"]
-    bounds = [None, *_INGEST_SPLITS, None]
-    waves = []
-    for k in range(len(_INGEST_SPLITS) + 1):
-        wave = docs.select(*cols)
-        if bounds[k] is not None:
-            wave = wave.filter(F.col("doc_id") >= bounds[k])
-        if bounds[k + 1] is not None:
-            wave = wave.filter(F.col("doc_id") < bounds[k + 1])
-        waves.append(wave)
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(docs.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stream_doc_dedup_to_parquet(
+        stream, table, os.path.join(base, "ckpt"), os.path.join(base, "index")
     )
-    stream_doc_dedup_to_parquet(stream, table, ckpt, index)
     return (
         spark.read.parquet(table)
         .select(
@@ -1655,30 +1577,16 @@ def _q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     dynamic overwrite of their own partition (replay-safe).  Batches
     are independent given the frozen reference, so the oracle is the
     batch PSI twin per wave, batch-tagged and unioned."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_psi_monitor
 
     ref, cur = _drift_sides(spark, sf_dir)
     cols = ["event_id", "ts", "value"]
-    waves = [
-        cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)
-    ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_psi_monitor",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _wave_stream(
+        spark, "psi_monitor", sf_dir,
+        [cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)],
     )
     out = os.path.join(base, "profiles")
-    ckpt = os.path.join(base, "ckpt")
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(cur.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_psi_monitor(stream, ref.select(*cols), out, ckpt)
+    stream_psi_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(out)
         .select(
@@ -1706,30 +1614,16 @@ def _q_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel (no binning convention to defend).  One verdict row per
     batch, replay-safe dynamic partition overwrite; the oracle is the
     batch KS twin per wave, batch-tagged and unioned."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_ks_monitor
 
     ref, cur = _drift_sides(spark, sf_dir)
     cols = ["event_id", "ts", "value"]
-    waves = [
-        cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)
-    ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_ks_monitor",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _wave_stream(
+        spark, "ks_monitor", sf_dir,
+        [cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)],
     )
     out = os.path.join(base, "profiles")
-    ckpt = os.path.join(base, "ckpt")
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(cur.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_ks_monitor(stream, ref.select(*cols), out, ckpt)
+    stream_ks_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(out)
         .select(
@@ -1751,30 +1645,16 @@ def _q_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming drift panel (PSI / KS / χ²).  Reference category counts
     frozen once; per-batch profiles land replay-safe; the oracle is
     the batch χ² twin per wave, batch-tagged and unioned."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
 
     ref, cur = _drift_sides(spark, sf_dir)
     cols = ["event_id", "ts", "event_type"]
-    waves = [
-        cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)
-    ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_chi2_monitor",
-        os.path.basename(os.path.normpath(sf_dir)),
+    base, stream = _wave_stream(
+        spark, "chi2_monitor", sf_dir,
+        [cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)],
     )
     out = os.path.join(base, "profiles")
-    ckpt = os.path.join(base, "ckpt")
-    src = _stage_waves(base, waves)
-    stream = (
-        spark.readStream.schema(cur.select(*cols).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    stream_chi2_monitor(stream, ref.select(*cols), out, ckpt)
+    stream_chi2_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(out)
         .select(
@@ -2316,7 +2196,7 @@ def _staged_partitioned_master(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_parquet
 
     master = synthetic_master_table(spark, sf_dir)
-    stage = _roundtrip_stage_dir("master_part", sf_dir)
+    stage = scratch_dir("master_part_stage", sf_dir)
     # repartition on the partition keys BEFORE partitionBy: without it
     # every one of the shuffle's tasks writes a sliver into every
     # (year, month) directory — measured 960 files for 60k rows at
@@ -2380,7 +2260,7 @@ def _q_table_maintenance_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
         "o_totalprice",
         F.year("o_orderdate").cast("int").alias("o_year"),
     )
-    stage = _roundtrip_stage_dir("maint", sf_dir)
+    stage = scratch_dir("maint_stage", sf_dir)
     # static overwrite resets the whole table, so the entry is
     # idempotent across bench repeats
     write_parquet(seed.repartition("o_year"), stage, partition_by=["o_year"])
@@ -2437,7 +2317,7 @@ def _q_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
         F.year("o_orderdate").cast("int").alias("o_year"),
     )
-    stage = _roundtrip_stage_dir("retention", sf_dir)
+    stage = scratch_dir("retention_stage", sf_dir)
     # static overwrite resets the whole table, so the entry is
     # idempotent across bench repeats
     write_parquet(seed.repartition("o_year"), stage, partition_by=["o_year"])
@@ -2473,7 +2353,7 @@ def _q_ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_parquet
 
     orders = load_table(spark, sf_dir, "orders")
-    stage = _roundtrip_stage_dir("schema_evo", sf_dir)
+    stage = scratch_dir("schema_evo_stage", sf_dir)
     gen1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )
@@ -2509,9 +2389,6 @@ def _q_stream_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
     proves the three-wave incremental maintenance converges to exactly
     the full recompute (the defining property of a materialized
     view)."""
-    import os
-    import tempfile
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
         stream_increment_counts_to_parquet,
     )
@@ -2519,18 +2396,15 @@ def _q_stream_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_matview",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
     # coalesce: the wave split must PARTITION the source — a bare
     # pmod(NULL, 3) == k is NULL-false in every wave, so a NULL-id
     # event would silently never be delivered while the full-recompute
     # oracle counts it (r8 cdc-replay probe finding; same class as the
     # pack_bins NULL-id drop).  NULL ids ride wave 0.
-    src = _stage_waves(
-        base,
+    base, stream = _wave_stream(
+        spark,
+        "matview",
+        sf_dir,
         [
             ev.filter(
                 F.coalesce(F.pmod(F.col("event_id"), F.lit(3)), F.lit(0))
@@ -2538,11 +2412,6 @@ def _q_stream_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             for k in range(3)
         ],
-    )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
     )
     view = os.path.join(base, "view")
     stream_increment_counts_to_parquet(
@@ -2586,9 +2455,6 @@ def _q_cdc_out_of_order_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically before delivery (a CDC stream needs a per-key
     total order on its version column; the twin applies the same
     collapse)."""
-    import os
-    import tempfile
-
     from pyspark.sql import Window
 
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
@@ -2620,16 +2486,8 @@ def _q_cdc_out_of_order_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ranked.filter((F.pmod(rn, F.lit(3)) == 1) | (rn <= 3)),
     ]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "spark_graft_cdc_ooo",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    src = _stage_waves(base, [w.drop("__rn") for w in waves])
-    stream = (
-        spark.readStream.schema(uniq.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    base, stream = _wave_stream(
+        spark, "cdc_ooo", sf_dir, [w.drop("__rn") for w in waves]
     )
     table = os.path.join(base, "table")
     stream_merge_to_parquet(
@@ -2796,7 +2654,7 @@ def _q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_bucketed
 
     tag = _re.sub(r"\W", "_", os.path.basename(os.path.normpath(sf_dir)))
-    base = _roundtrip_stage_dir("bucketed", sf_dir)
+    base = scratch_dir("bucketed_stage", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )

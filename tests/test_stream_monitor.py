@@ -32,6 +32,31 @@ def _stage_single_wave(spark, df, base):
     return src
 
 
+def _drain_one_wave(spark, monitor, ref, wave, base, order, ckpts=("ckpt",)):
+    """Stage ``wave`` as a one-file stream source under ``base`` and
+    drain it through ``monitor`` once per checkpoint in ``ckpts``, all
+    into one output (a fresh checkpoint replays the wave under the
+    SAME batch id).  Returns the output read back after each drain."""
+    src = _stage_single_wave(spark, wave, base)
+    out = os.path.join(base, "profiles")
+    reads = []
+    for ck in ckpts:
+        stream = (
+            spark.readStream.schema(wave.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        monitor(stream, ref, out, os.path.join(base, ck))
+        reads.append(spark.read.parquet(out).orderBy(*order).collect())
+    return reads
+
+
+def _cats(spark, pairs):
+    return spark.createDataFrame(
+        [(c,) for c, n in pairs for _ in range(n)], "event_type string"
+    )
+
+
 def test_stream_batch_equals_batch_operator(spark, tmp_path):
     ref = _vals(spark, range(100))
     batch = _vals(spark, range(50, 150))
@@ -61,23 +86,12 @@ def test_stream_batch_equals_batch_operator(spark, tmp_path):
 def test_stream_replay_overwrites_not_duplicates(spark, tmp_path):
     ref = _vals(spark, range(100))
     batch = _vals(spark, range(30, 80))
-    base = str(tmp_path / "m2")
-    src = _stage_single_wave(spark, batch, base)
-    out = os.path.join(base, "profiles")
-
-    def _run(ck):
-        stream = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        stream_psi_monitor(stream, ref, out, os.path.join(base, ck))
-        return spark.read.parquet(out).orderBy("bucket").collect()
-
-    first = _run("ckpt_a")
     # fresh checkpoint = the wave replays with the SAME batch id; the
     # dynamic partition overwrite must leave one copy, not two
-    second = _run("ckpt_b")
+    first, second = _drain_one_wave(
+        spark, stream_psi_monitor, ref, batch, str(tmp_path / "m2"),
+        order=("bucket",), ckpts=("ckpt_a", "ckpt_b"),
+    )
     assert second == first
 
 
@@ -88,16 +102,10 @@ def test_stream_empty_batch_scored_full_spine(spark, tmp_path):
     declared batch indices (a skipped batch would shift them)."""
     ref = _vals(spark, range(10))
     empty = _vals(spark, []).where(F.lit(False))
-    base = str(tmp_path / "m3")
-    src = _stage_single_wave(spark, empty, base)
-    out = os.path.join(base, "profiles")
-    stream = (
-        spark.readStream.schema(empty.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    (rows,) = _drain_one_wave(
+        spark, stream_psi_monitor, ref, empty, str(tmp_path / "m3"),
+        order=("bucket",),
     )
-    stream_psi_monitor(stream, ref, out, os.path.join(base, "ckpt"))
-    rows = spark.read.parquet(out).orderBy("bucket").collect()
     assert [r.bucket for r in rows] == list(range(1, 11))
     assert all(r.cur_n == 0 for r in rows)
     assert all(r.ref_n >= 0 for r in rows) and sum(r.ref_n for r in rows) == 10
@@ -140,16 +148,10 @@ def test_stream_ks_empty_batch_scored_null_stat(spark, tmp_path):
 
     ref = _vals(spark, range(10))
     empty = _vals(spark, []).where(F.lit(False))
-    base = str(tmp_path / "k2")
-    src = _stage_single_wave(spark, empty, base)
-    stream = (
-        spark.readStream.schema(empty.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    (rows,) = _drain_one_wave(
+        spark, stream_ks_monitor, ref, empty, str(tmp_path / "k2"),
+        order=("ingest_batch",),
     )
-    out = os.path.join(base, "verdicts")
-    stream_ks_monitor(stream, ref, out, os.path.join(base, "ckpt"))
-    rows = spark.read.parquet(out).collect()
     assert len(rows) == 1
     assert rows[0].ks_stat is None
     assert rows[0].n_a == 10 and rows[0].n_b == 0
@@ -160,21 +162,10 @@ def test_stream_ks_replay_overwrites_not_duplicates(spark, tmp_path):
 
     ref = _vals(spark, range(60))
     batch = _vals(spark, range(20, 80))
-    base = str(tmp_path / "k3")
-    src = _stage_single_wave(spark, batch, base)
-    out = os.path.join(base, "verdicts")
-
-    def _run(ck):
-        stream = (
-            spark.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        stream_ks_monitor(stream, ref, out, os.path.join(base, ck))
-        return spark.read.parquet(out).collect()
-
-    first = _run("ckpt_a")
-    second = _run("ckpt_b")
+    first, second = _drain_one_wave(
+        spark, stream_ks_monitor, ref, batch, str(tmp_path / "k3"),
+        order=("ingest_batch",), ckpts=("ckpt_a", "ckpt_b"),
+    )
     assert second == first and len(first) == 1
 
 
@@ -185,13 +176,8 @@ def test_stream_chi2_batch_equals_batch_operator(spark, tmp_path):
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import chi2_drift
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
 
-    def _cats(pairs):
-        return spark.createDataFrame(
-            [(c,) for c, n in pairs for _ in range(n)], "event_type string"
-        )
-
-    ref = _cats([("a", 30), ("b", 20)])
-    batch = _cats([("a", 10), ("b", 25), ("c", 5)])
+    ref = _cats(spark, [("a", 30), ("b", 20)])
+    batch = _cats(spark, [("a", 10), ("b", 25), ("c", 5)])
     base = str(tmp_path / "c1")
     src = _stage_single_wave(spark, batch, base)
     stream = (
@@ -215,3 +201,33 @@ def test_stream_chi2_batch_equals_batch_operator(spark, tmp_path):
     assert got == want
     assert [r.category for r in got] == ["a", "b", "c"]
     assert got[2].ref_n == 0  # batch-only category surfaces
+
+
+def test_stream_chi2_empty_batch_scored_zero_cur_n(spark, tmp_path):
+    """An empty micro-batch is SCORED over the reference's categories
+    with all-zero cur_n, aligned with the twin, never skipped."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
+
+    ref = _cats(spark, [("a", 30), ("b", 20)])
+    empty = _cats(spark, []).where(F.lit(False))
+    (rows,) = _drain_one_wave(
+        spark, stream_chi2_monitor, ref, empty, str(tmp_path / "c2"),
+        order=("category",),
+    )
+    assert [(r.category, r.ref_n, r.cur_n) for r in rows] == [
+        ("a", 30, 0),
+        ("b", 20, 0),
+    ]
+    assert {r.ingest_batch for r in rows} == {0}
+
+
+def test_stream_chi2_replay_overwrites_not_duplicates(spark, tmp_path):
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
+
+    ref = _cats(spark, [("a", 30), ("b", 20)])
+    batch = _cats(spark, [("a", 10), ("b", 25), ("c", 5)])
+    first, second = _drain_one_wave(
+        spark, stream_chi2_monitor, ref, batch, str(tmp_path / "c3"),
+        order=("category",), ckpts=("ckpt_a", "ckpt_b"),
+    )
+    assert second == first and len(first) == 3

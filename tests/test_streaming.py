@@ -946,3 +946,65 @@ def test_stream_line_dedup_sequential_lines(spark, tmp_path):
     assert got[2].clean_text == f"{fresh}\nshort"
     assert got[3].clean_text == "also" and got[3].n_removed == 1
     assert got[4].clean_text == "closing words" and got[4].n_removed == 2
+
+
+def test_stream_line_dedup_replay_ignores_own_partition(spark, tmp_path):
+    """Crash-replay pin for the line ingest (same construction as the
+    doc-level ingests): a crashed batch-2 attempt leaves its cleaned
+    partition on disk; the replay must not read its own kept lines
+    back as prior state — doc 5's long line would otherwise drop as a
+    duplicate of itself."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
+        stream_line_dedup_to_parquet,
+    )
+
+    fresh = "a genuinely new long line that nobody wrote before this"
+    waves = [
+        [(1, "one two three four five six seven", "en", 10)],
+        [(2, "alpha beta gamma delta epsilon zeta", "en", 10)],
+        [(5, f"{fresh}\nclosing", "en", 11)],
+    ]
+    table = str(tmp_path / "lr_table")
+    schema = "doc_id long, text string, lang string, n_chars long"
+    line_dedup(spark.createDataFrame(waves[2], schema)).write.mode(
+        "overwrite"
+    ).parquet(f"{table}/ingest_batch=2")
+    stream = _stage_doc_waves(spark, tmp_path, waves, "lr")
+    stream_line_dedup_to_parquet(stream, table, str(tmp_path / "lr_ckpt"))
+    got = {r.doc_id: r for r in spark.read.parquet(table).collect()}
+    assert sorted(got) == [1, 2, 5]
+    assert got[5].ingest_batch == 2
+    assert got[5].clean_text == f"{fresh}\nclosing" and got[5].n_removed == 0
+
+
+def test_failed_micro_batch_releases_its_staging(spark, tmp_path, monkeypatch):
+    """A micro-batch that raises after staging must not leak the
+    staging it registered on the stream thread: the drain releases it
+    before the failure surfaces as a StreamingQueryException."""
+    from pyspark.errors import StreamingQueryException
+
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm import dedup
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import (
+        release_all_staging,
+        stage,
+    )
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
+        stream_line_dedup_to_parquet,
+    )
+
+    def _stage_then_fail(df, **kwargs):
+        stage(df)
+        raise RuntimeError("injected micro-batch failure")
+
+    monkeypatch.setattr(dedup, "line_dedup", _stage_then_fail)
+    release_all_staging()
+    stream = _stage_doc_waves(
+        spark, tmp_path, [[(1, "one two three four five six seven", "en", 10)]],
+        "fail",
+    )
+    with pytest.raises(StreamingQueryException):
+        stream_line_dedup_to_parquet(
+            stream, str(tmp_path / "fail_table"), str(tmp_path / "fail_ckpt")
+        )
+    assert release_all_staging() == 0

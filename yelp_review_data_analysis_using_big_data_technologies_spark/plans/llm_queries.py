@@ -38,7 +38,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.graph
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import (
     dedup_keyed_deterministic,
 )
-from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
+from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table, scratch_dir
 
 
 
@@ -1561,15 +1561,9 @@ def retrieval_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-``_SERVE_POOL`` fused candidates that have a well-formed
     embedding (no geometry → cannot be diversified), deterministic on
     (rrf_score DESC, doc_id)."""
-    import os
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     emb = _load_embeddings(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_serve", sf_tag
-    )
+    path = scratch_dir("ivf_serve", sf_dir)
     cent = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
     q = emb.filter(F.col("vec_id") == _HYBRID_QVEC_ID).select(
         F.col("vec_id").alias("query_id"),
@@ -1637,14 +1631,8 @@ def vec_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SQL oracle twin) are identical; the driver hash therefore
     proves the persisted round-trip is lossless AND the pruned search
     returns exactly what the in-memory operator does."""
-    import os
-    import tempfile
-
     emb = _load_embeddings(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_index", sf_tag
-    )
+    path = scratch_dir("ivf_index", sf_dir)
     # r16 opt: thread the frozen centroids the build just returned
     cent = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
     return lvec.search_ivf_index(
@@ -1665,14 +1653,8 @@ def vec_ivf_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     a green hash proves build → merge → merge → compact → search is
     lossless, i.e. the maintenance operations a long-running 100-TB
     serving index actually undergoes never change an answer."""
-    import os
-    import tempfile
-
     emb = _load_embeddings(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_compact", sf_tag
-    )
+    path = scratch_dir("ivf_compact", sf_dir)
     # the bootstrap build statically overwrites the cells dir, so the
     # entry is idempotent across bench repeats
     # r16 opt: centroids are FROZEN across merge+compact, so the
@@ -1710,14 +1692,8 @@ def vec_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     else (missing real rows would change the results).  The
     right-to-be-forgotten path a serving vector store actually needs:
     only cells holding a target id rewrite; no rebuild."""
-    import os
-    import tempfile
-
     emb = _load_embeddings(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_forget", sf_tag
-    )
+    path = scratch_dir("ivf_forget", sf_dir)
     clones = emb.select(
         (F.col("vec_id") + F.lit(10_000_000)).alias("vec_id"), "embedding"
     )
@@ -1763,14 +1739,8 @@ def vec_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``vec_filtered_topk`` keeps the exact-bruteforce form; this is
     the shape that survives 100 TB (reads ``eff_p/n_cells`` of the
     index bytes per query)."""
-    import os
-    import tempfile
-
     emb = _load_embeddings(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivf_filtered", sf_tag
-    )
+    path = scratch_dir("ivf_filtered", sf_dir)
     cent = lvec.build_ivf_index(
         emb, path, n_cells=_IVF_CELLS, meta_cols=["label"]
     )
@@ -1800,14 +1770,8 @@ def vec_filtered_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only driver check, like every production-dial PQ entry (the
     per-subspace KMeans codebooks are engine-specific); the
     exhaustive-dial collapse to filtered bruteforce is unit-pinned."""
-    import os
-    import tempfile
-
     emb = _load_embeddings(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivfpq_filtered", sf_tag
-    )
+    path = scratch_dir("ivfpq_filtered", sf_dir)
     cent, codes = lvec.build_ivfpq_index(
         emb, path, n_cells=_IVF_CELLS, meta_cols=["label"]
     )
@@ -2060,14 +2024,8 @@ def vec_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only driver check (no oracle): the per-subspace KMeans
     codebooks are engine-specific (same declaration as the in-memory
     entry); recall@5 vs bruteforce floor is unit-pinned."""
-    import os
-    import tempfile
-
     emb = _load_embeddings(spark, sf_dir)
-    sf_tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), "spark_graft_ivfpq_index", sf_tag
-    )
+    path = scratch_dir("ivfpq_index", sf_dir)
     # r16 opt (guide §2.4): the build returns the frozen parameters
     # it just wrote; threading them into the search skips two bounded
     # re-collect jobs (doubles round-trip parquet exactly — identical)

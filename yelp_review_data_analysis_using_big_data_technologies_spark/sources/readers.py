@@ -11,6 +11,7 @@ crawler (main.tf:28-38).
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -146,6 +147,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     fix = _TABLE_NORMALIZERS.get(name)
     return fix(df) if fix else df
+
+
+def scratch_dir(name: str, sf_dir: str) -> str:
+    """Local scratch directory ``<tmp>/spark_graft_<name>/<sf>`` for an
+    entry that writes and re-reads its own tables, indexes or streams:
+    one per (entry, scale factor), so entries never share state and a
+    rerun at the same scale factor reuses (and overwrites) its own."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"spark_graft_{name}",
+        os.path.basename(os.path.normpath(sf_dir)),
+    )
 
 
 def load_tables(

@@ -41,12 +41,42 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup impor
     near_dup_banded_sql,
     verified_pairs_from,
 )
-from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging, spread, stage
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import spread, stage
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.text import (
     minhash_signature_from,
     shingled,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import _is_missing_table
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
+
+
+def read_before(
+    spark, path: str, batch_col: str, batch_id: int
+) -> DataFrame | None:
+    """Accumulated state at ``path`` visible to micro-batch
+    ``batch_id``: partitions of strictly EARLIER batches only, or
+    ``None`` while no table exists yet (:func:`streaming.joins
+    ._is_missing_table`; an existing-but-unreadable table raises).
+
+    A crash between a batch's partition write and its checkpoint
+    commit leaves that batch's own partition on disk; a replay that
+    read it back would reject every row as a SELF-duplicate and
+    overwrite the partition with an empty result — silent loss.
+    Filtering ``batch_col < batch_id`` makes the replay see exactly
+    the state the original attempt saw (partition pruning keeps the
+    filter a directory-level skip, no data read).  ``batch_col`` stays
+    in the result; callers that do not need it drop it."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as exc:
+        if not _is_missing_table(exc):
+            raise
+        return None
+    if batch_col in df.columns:
+        df = df.filter(F.col(batch_col) < F.lit(batch_id))
+    return df
 
 
 def _delta_features(
@@ -98,6 +128,18 @@ def _delta_features(
         .alias("__bands"),
     )
     return stage(feats)
+
+
+def _band_sides(feats: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """The ``(base, keys)`` pair :func:`llm.dedup.verified_pairs_from`
+    and :func:`llm.dedup.match_banded_candidates` take, cut from a
+    :func:`_delta_features` relation (batch or index): ``(__id, __sh,
+    __sz)`` and one ``(__id, band_key)`` row per band key."""
+    base = feats.select(F.col(id_col).alias("__id"), "__sh", "__sz")
+    keys = feats.select(
+        F.col(id_col).alias("__id"), F.explode("__bands").alias("band_key")
+    )
+    return base, keys
 
 
 def stream_dedup_ingest_to_parquet(
@@ -153,43 +195,6 @@ def stream_dedup_ingest_to_parquet(
     the indexed one near-flat.  Rule of thumb: backfills and small corpora →
     recompute (no index build/write overhead); any long-lived stream
     past ~10⁵ docs → ``index_path=``."""
-    from pyspark.errors import AnalysisException
-
-    def _read_before(spark, path: str, batch_id: int) -> DataFrame | None:
-        """Accumulated state visible to ``batch_id``: partitions of
-        strictly EARLIER batches only.  A crash between the partition
-        write and the checkpoint commit leaves this batch's own
-        partition on disk; a replay that read it would reject every
-        doc as an exact SELF-duplicate and overwrite the partition
-        with an empty result — silent loss.  Filtering
-        ``batch_col < batch_id`` makes the replay see exactly the
-        state the original attempt saw (partition pruning keeps the
-        filter a directory-level skip, no data read)."""
-        try:
-            df = spark.read.parquet(path)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        if batch_col in df.columns:
-            df = df.filter(F.col(batch_col) < F.lit(batch_id)).drop(
-                batch_col
-            )
-        return df
-
-    def _read_corpus_with_batches(spark, batch_id: int) -> DataFrame | None:
-        """Accumulated corpus visible to ``batch_id`` WITH its batch
-        column — the index backfill needs each doc's original batch so
-        the backfilled features land in replay-consistent partitions."""
-        try:
-            df = spark.read.parquet(table)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        if batch_col in df.columns:
-            df = df.filter(F.col(batch_col) < F.lit(batch_id))
-        return df
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -206,7 +211,7 @@ def stream_dedup_ingest_to_parquet(
             feats = _delta_features(
                 batch, id_col, text_col, num_hashes, bands, shingle_n
             )
-            index = _read_before(spark, index_path, batch_id)
+            index = read_before(spark, index_path, batch_col, batch_id)
             if index is None:
                 # Corpus-exists-but-index-missing is NOT bootstrap: a
                 # stream migrated from recompute mode has accumulated
@@ -216,7 +221,7 @@ def stream_dedup_ingest_to_parquet(
                 # FOREVER.  Backfill the index from the corpus once
                 # (features recomputed per original batch partition, so
                 # replay visibility rules keep working), then proceed.
-                prior = _read_corpus_with_batches(spark, batch_id)
+                prior = read_before(spark, table, batch_col, batch_id)
                 if prior is not None and prior.head(1):
                     bf = _delta_features(
                         prior, id_col, text_col, num_hashes, bands, shingle_n
@@ -224,7 +229,7 @@ def stream_dedup_ingest_to_parquet(
                     bf.write.mode("overwrite").partitionBy(
                         batch_col
                     ).parquet(index_path)
-                    index = _read_before(spark, index_path, batch_id)
+                    index = read_before(spark, index_path, batch_col, batch_id)
             if index is None:
                 admitted_ids = feats.select(id_col)
             else:
@@ -237,18 +242,8 @@ def stream_dedup_ingest_to_parquet(
                 # recompute mode (llm.dedup.match_banded_candidates) —
                 # the two modes must admit identical sets by
                 # construction, not by parallel maintenance
-                def _split(f):
-                    base = f.select(
-                        F.col(id_col).alias("__id"), "__sh", "__sz"
-                    )
-                    keys = f.select(
-                        F.col(id_col).alias("__id"),
-                        F.explode("__bands").alias("band_key"),
-                    )
-                    return base, keys
-
-                dbase, dkeys = _split(feats)
-                cbase, ckeys = _split(index)
+                dbase, dkeys = _band_sides(feats, id_col)
+                cbase, ckeys = _band_sides(index, id_col)
                 matched = match_banded_candidates(
                     dbase, dkeys, cbase, ckeys, id_col, threshold
                 )
@@ -262,12 +257,12 @@ def stream_dedup_ingest_to_parquet(
             admitted_ids = stage(admitted_ids)
             admitted = batch.join(admitted_ids, on=id_col, how="left_semi")
         else:
-            corpus = _read_before(spark, table, batch_id)
+            corpus = read_before(spark, table, batch_col, batch_id)
             admitted = (
                 batch
                 if corpus is None
                 else dedup_against_corpus(
-                    corpus,
+                    corpus.drop(batch_col),
                     batch,
                     id_col=id_col,
                     text_col=text_col,
@@ -287,24 +282,8 @@ def stream_dedup_ingest_to_parquet(
             ).write.mode("overwrite").parquet(
                 f"{index_path}/{batch_col}={batch_id}"
             )
-        # Per-BATCH staging release, and not only for memory hygiene:
-        # the banded staging persists plan fragments built over the
-        # corpus PATH, and Spark's cache manager substitutes a cached
-        # fragment into any later semantically-equal subplan — so the
-        # NEXT micro-batch's corpus read would silently resolve to
-        # THIS batch's file listing and anti-join against a stale
-        # corpus (observed: wave-2 docs admitted despite wave-1 near
-        # dups).  Releasing after the write materializes drops the
-        # fragments so every batch lists the table fresh.
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
 
 
 def dedup_ingest_sql(
@@ -433,17 +412,6 @@ def stream_doc_dedup_to_parquet(
     cross-batch, so the intra pass must not group them either) and
     have no shingles, so they are always admitted.
     """
-    from pyspark.errors import AnalysisException
-
-    def _read_index_before(spark, batch_id: int) -> DataFrame | None:
-        try:
-            df = spark.read.parquet(index_path)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        return df.filter(F.col(batch_col) < F.lit(batch_id)).drop(batch_col)
-
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         feats = _delta_features(
@@ -462,20 +430,14 @@ def stream_doc_dedup_to_parquet(
             .select(id_col)
         )
         # intra-batch near keep-first: drop id_b of every verified pair
-        base = feats.select(
-            F.col(id_col).alias("__id"), "__sh", "__sz"
-        )
-        keys = feats.select(
-            F.col(id_col).alias("__id"),
-            F.explode("__bands").alias("band_key"),
-        )
+        base, keys = _band_sides(feats, id_col)
         intra_dropped = verified_pairs_from(base, keys, threshold).select(
             F.col("id_b").alias(id_col)
         )
         admitted_ids = exact_first.join(
             intra_dropped, on=id_col, how="left_anti"
         )
-        index = _read_index_before(spark, batch_id)
+        index = read_before(spark, index_path, batch_col, batch_id)
         if index is not None:
             # cross exact: any earlier SEEN doc with the same hash
             admitted_ids = (
@@ -488,11 +450,7 @@ def stream_doc_dedup_to_parquet(
                 .select(id_col)
             )
             # cross near: shared predicate builder with the batch path
-            ckeys = index.select(
-                F.col(id_col).alias("__id"),
-                F.explode("__bands").alias("band_key"),
-            )
-            cbase = index.select(F.col(id_col).alias("__id"), "__sh", "__sz")
+            cbase, ckeys = _band_sides(index, id_col)
             matched = match_banded_candidates(
                 base, keys, cbase, ckeys, id_col, threshold
             )
@@ -508,17 +466,8 @@ def stream_doc_dedup_to_parquet(
         feats.write.mode("overwrite").parquet(
             f"{index_path}/{batch_col}={batch_id}"
         )
-        # same cached-fragment hazard as the admission ingest: release
-        # so the next batch lists the index fresh
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
 
 
 def doc_dedup_ingest_sql(
@@ -613,35 +562,22 @@ def stream_line_dedup_to_parquet(
     scripts/measure_ingest_crossover.py at c84e9fc) applies verbatim: append
     each batch's new line hashes to an index table and anti-join
     that instead.  Documented upgrade path, same admitted output."""
-    from pyspark.errors import AnalysisException
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
 
-    def _prior_hashes(spark, batch_id: int) -> DataFrame | None:
-        """sha2 set of every kept line of strictly earlier batches
-        (reading only earlier partitions keeps crash-replay honest,
-        same argument as the doc-level ingest's ``_read_before``)."""
-        try:
-            df = spark.read.parquet(table)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise
-            return None
-        df = df.filter(F.col(batch_col) < F.lit(batch_id))
-        lines = df.select(
-            F.explode(F.split(F.col("clean_text"), F.lit("\n"))).alias(
-                "__line"
-            )
-        )
-        return (
-            lines.filter(F.length("__line") >= min_len)
-            .select(F.sha2(F.col("__line"), 256).alias("__h"))
-            .distinct()
-        )
-
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        prior = _prior_hashes(spark, batch_id)
+        prior = read_before(batch_df.sparkSession, table, batch_col, batch_id)
+        if prior is not None:
+            # sha2 set of every kept line of strictly earlier batches
+            prior = (
+                prior.select(
+                    F.explode(F.split(F.col("clean_text"), F.lit("\n"))).alias(
+                        "__line"
+                    )
+                )
+                .filter(F.length("__line") >= min_len)
+                .select(F.sha2(F.col("__line"), 256).alias("__h"))
+                .distinct()
+            )
         cleaned = line_dedup(
             batch_df,
             text_col=text_col,
@@ -655,15 +591,8 @@ def stream_line_dedup_to_parquet(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(table)
         )
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
 
 
 def line_dedup_ingest_sql(
@@ -802,15 +731,8 @@ def stream_ann_index_ingest(
                 cent_rows=frozen["cent"],
                 stored_meta=frozen["meta"],
             )
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
     # the frozen centroids (or None when the drain saw no batches) —
     # a post-drain search threads them instead of re-collecting
     return frozen.get("cent")
@@ -920,15 +842,8 @@ def stream_pq_index_ingest(
                 by_sub=frozen["codes"],
                 stored_meta=frozen["meta"],
             )
-        release_staging(blocking=True)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream, checkpoint, _admit)
     # the frozen parameters (or Nones when the drain saw no batches)
     # — a post-drain search threads them instead of re-collecting
     return frozen.get("cent"), frozen.get("codes")

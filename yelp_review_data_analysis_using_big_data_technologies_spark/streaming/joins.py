@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
+
 
 def stream_stream_interval_join(
     left: DataFrame,
@@ -170,13 +172,7 @@ def stream_merge_to_parquet(
                 version_col=version_col,
             )
 
-    q = (
-        result.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(result, checkpoint, _merge)
 
 
 def stream_increment_counts_to_parquet(
@@ -338,13 +334,7 @@ def stream_increment_counts_to_parquet(
         out = _additive(current, partial).localCheckpoint(eager=True)
         write_parquet(out, path)
 
-    q = (
-        events.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(events, checkpoint, _merge)
 
 
 def stream_vectors_to_ivf_index(
@@ -386,10 +376,4 @@ def stream_vectors_to_ivf_index(
             batch_df, index_path, id_col=id_col, vec_col=vec_col
         )
 
-    q = (
-        vectors.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(vectors, checkpoint, _merge)

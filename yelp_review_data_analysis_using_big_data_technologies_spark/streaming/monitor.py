@@ -30,8 +30,72 @@ run instead of rescanning it per batch.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import (
+    release_staging,
+    stage,
+    staging_scope,
+)
+from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+    chi2_drift_frozen,
+    chi2_drift_sql,
+    chi2_freeze_reference,
+    ks_2sample,
+    ks_2sample_sql,
+    ks_side_counts,
+    psi_freeze_reference,
+    psi_profile_frozen,
+    psi_profile_sql,
+)
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
+
+
+def _drain_scored(
+    stream: DataFrame,
+    out_path: str,
+    checkpoint: str,
+    score: Callable[[DataFrame], DataFrame],
+) -> None:
+    """The monitors' shared sink: drain ``stream``, score each
+    micro-batch with ``score``, tag the result with its
+    ``ingest_batch`` and write it as ONE file into that batch's own
+    partition of ``out_path`` by dynamic overwrite — a replayed batch
+    id overwrites itself instead of duplicating rows.  Empty
+    micro-batches are scored too, so written partitions stay aligned
+    with the twins' declared batch indices."""
+    def _write(batch: DataFrame, batch_id: int) -> None:
+        (
+            score(batch)
+            .withColumn("ingest_batch", F.lit(int(batch_id)))
+            .coalesce(1)
+            .write.partitionBy("ingest_batch")
+            .option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite")
+            .parquet(out_path)
+        )
+
+    drain(stream, checkpoint, _write)
+
+
+def _per_batch_union(
+    batch_sqls: list[str], twin: Callable[[str], str], order_by: str
+) -> str:
+    """DuckDB form of a monitor run: the batch twin per micro-batch,
+    tagged with its ``ingest_batch`` index and unioned (batches are
+    independent given the frozen reference)."""
+    parts = [
+        f"SELECT {k} AS ingest_batch, * FROM (" + twin(bsql) + ")"
+        for k, bsql in enumerate(batch_sqls)
+    ]
+    return (
+        "SELECT * FROM (\n"
+        + "\nUNION ALL\n".join(parts)
+        + f"\n) ORDER BY {order_by}"
+    )
 
 
 def stream_psi_monitor(
@@ -45,46 +109,19 @@ def stream_psi_monitor(
     """Drain ``stream`` (``availableNow``) scoring each micro-batch's
     ``value_col`` distribution against ``reference`` with
     :func:`~...operators.drift.psi_profile`; per-batch profiles land
-    partitioned by ``ingest_batch`` at ``out_path``."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
-        psi_freeze_reference,
-        psi_profile_frozen,
-    )
-
+    partitioned by ``ingest_batch`` at ``out_path``.  An empty
+    micro-batch scores as an all-zero ``cur_n`` column over the full
+    bucket spine."""
     # ONE reference scan for the whole run: edges + per-bucket counts
     # collapse to a bounded driver-side literal every batch reuses
     frozen = psi_freeze_reference(
         reference, value_col=value_col, buckets=buckets
     )
-
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        # empty micro-batches are scored too (an empty cur side is an
-        # all-zero cur_n column over the full bucket spine): skipping
-        # them would shift alignment between written partitions and
-        # the twin's declared batch indices
-        out = psi_profile_frozen(batch, frozen, value_col=value_col)
-        try:
-            (
-                out.withColumn("ingest_batch", F.lit(int(batch_id)))
-                .coalesce(1)
-                .write.partitionBy("ingest_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_path)
-            )
-        finally:
-            # per-batch staging release (the ingest.py discipline):
-            # psi_profile stages its bucket relation, and an unreleased
-            # stream accumulates pinned blocks batch after batch
-            release_staging(blocking=True)
-
-    (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_scored(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: psi_profile_frozen(batch, frozen, value_col=value_col),
     )
 
 
@@ -111,23 +148,12 @@ def stream_ks_monitor(
     overwrites its own partition).  Empty micro-batches are scored
     too — ``n_b = 0`` yields a NULL ``ks_stat`` row, keeping written
     partitions aligned with the twin's batch indices."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import (
-        release_staging,
-        stage,
-        staging_scope,
-    )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import ks_2sample
-
     # the reference's distinct-value CDF state is not a bounded sketch
     # (unlike the PSI edges+counts), so it cannot collapse to driver
     # literals — but it CAN be computed once: stage the reference
     # relation for the whole run instead of rescanning it per batch.
     # Named scope: foreachBatch runs on the STREAM EXECUTION thread,
     # whose per-batch release must not evict the cross-thread ref.
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
-        ks_side_counts,
-    )
-
     ref_tag = f"stream_ks_monitor_ref:{out_path}"
     with staging_scope(ref_tag):
         # r15 opt: the reference's per-distinct-value counts are
@@ -143,37 +169,20 @@ def stream_ks_monitor(
         ref_counts = stage(
             ks_side_counts(reference, value_col).repartition("__v")
         )
-    ref_counts.count()
-
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        out = ks_2sample(
-            reference,
-            batch,
-            value_col=value_col,
-            buckets=buckets,
-            a_counts=ref_counts,
-        )
-        try:
-            (
-                out.withColumn("ingest_batch", F.lit(int(batch_id)))
-                .coalesce(1)
-                .write.partitionBy("ingest_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_path)
-            )
-        finally:
-            # releases ks_2sample's per-batch stagings (stream-thread
-            # scope) — the named ref scope is untouched
-            release_staging(blocking=True)
-
     try:
-        (
-            stream.writeStream.foreachBatch(_score)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        # inside the try: a fill that fails must still release the ref
+        ref_counts.count()
+        _drain_scored(
+            stream,
+            out_path,
+            checkpoint,
+            lambda batch: ks_2sample(
+                reference,
+                batch,
+                value_col=value_col,
+                buckets=buckets,
+                a_counts=ref_counts,
+            ),
         )
     finally:
         release_staging(blocking=True, tag=ref_tag)
@@ -187,18 +196,10 @@ def stream_ks_monitor_sql(
     """DuckDB twin of :func:`stream_ks_monitor` — the batch KS twin
     per micro-batch, batch-tagged and unioned (batches are
     independent given the frozen reference)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import ks_2sample_sql
-
-    parts = [
-        f"SELECT {k} AS ingest_batch, * FROM ("
-        + ks_2sample_sql(ref_sql, bsql, value_col=value_col)
-        + ")"
-        for k, bsql in enumerate(batch_sqls)
-    ]
-    return (
-        "SELECT * FROM (\n"
-        + "\nUNION ALL\n".join(parts)
-        + "\n) ORDER BY ingest_batch"
+    return _per_batch_union(
+        batch_sqls,
+        lambda bsql: ks_2sample_sql(ref_sql, bsql, value_col=value_col),
+        "ingest_batch",
     )
 
 
@@ -219,34 +220,12 @@ def stream_chi2_monitor(
     profiles land partitioned by ``ingest_batch`` (replay-safe
     dynamic overwrite).  Empty micro-batches are scored too (all-zero
     cur_n over the reference's categories)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
-        chi2_drift_frozen,
-        chi2_freeze_reference,
-    )
-
     frozen = chi2_freeze_reference(reference, cat_col=cat_col)
-
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        out = chi2_drift_frozen(batch, frozen, cat_col=cat_col)
-        try:
-            (
-                out.withColumn("ingest_batch", F.lit(int(batch_id)))
-                .coalesce(1)
-                .write.partitionBy("ingest_batch")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(out_path)
-            )
-        finally:
-            release_staging(blocking=True)
-
-    (
-        stream.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _drain_scored(
+        stream,
+        out_path,
+        checkpoint,
+        lambda batch: chi2_drift_frozen(batch, frozen, cat_col=cat_col),
     )
 
 
@@ -257,18 +236,10 @@ def stream_chi2_monitor_sql(
 ) -> str:
     """DuckDB twin of :func:`stream_chi2_monitor` — the batch χ² twin
     per micro-batch, batch-tagged and unioned."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import chi2_drift_sql
-
-    parts = [
-        f"SELECT {k} AS ingest_batch, * FROM ("
-        + chi2_drift_sql(ref_sql, bsql, cat_col=cat_col)
-        + ")"
-        for k, bsql in enumerate(batch_sqls)
-    ]
-    return (
-        "SELECT * FROM (\n"
-        + "\nUNION ALL\n".join(parts)
-        + "\n) ORDER BY ingest_batch, category"
+    return _per_batch_union(
+        batch_sqls,
+        lambda bsql: chi2_drift_sql(ref_sql, bsql, cat_col=cat_col),
+        "ingest_batch, category",
     )
 
 
@@ -283,16 +254,10 @@ def stream_psi_monitor_sql(
     profile is independent given the frozen reference, so the
     streaming run equals the per-batch batch computation by
     construction)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import psi_profile_sql
-
-    parts = [
-        f"SELECT {k} AS ingest_batch, * FROM ("
-        + psi_profile_sql(ref_sql, bsql, value_col=value_col, buckets=buckets)
-        + ")"
-        for k, bsql in enumerate(batch_sqls)
-    ]
-    return (
-        "SELECT * FROM (\n"
-        + "\nUNION ALL\n".join(parts)
-        + "\n) ORDER BY ingest_batch, bucket"
+    return _per_batch_union(
+        batch_sqls,
+        lambda bsql: psi_profile_sql(
+            ref_sql, bsql, value_col=value_col, buckets=buckets
+        ),
+        "ingest_batch, bucket",
     )

@@ -13,6 +13,10 @@ Design:
   with the ``availableNow`` trigger into a memory sink and returns the
   result table: batch-replay semantics, so the driver's DuckDB oracle
   can check the output against plain GROUP BY SQL.
+- ``drain`` is the one ``availableNow`` ``foreachBatch`` runner every
+  batch-API sink (dedup ingest, merge sinks, drift monitors) goes
+  through: trigger, checkpoint and per-batch staging release live
+  here and nowhere else.
 
 Watermark semantics (late-data policy) are covered by unit tests
 rather than the oracle: in ``append`` mode a window only emits once
@@ -27,9 +31,13 @@ an incremental backfill.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 
 #: Explicit stream schema for events.parquet with a ``{ts}`` hole —
 #: streams can't infer, and ``ts``'s declared type must match the
@@ -370,6 +378,46 @@ def stream_to_parquet(
         .start()
     )
     q.awaitTermination()
+
+
+def drain(
+    stream: DataFrame,
+    checkpoint: str,
+    on_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Run ``stream`` to completion (``availableNow``) through
+    ``foreachBatch(on_batch)`` with offsets checkpointed at
+    ``checkpoint``; a failed micro-batch surfaces here as the
+    ``StreamingQueryException`` raised by ``awaitTermination``.
+
+    After every micro-batch — including one whose ``on_batch`` raised
+    — the staging the batch registered on the stream-execution thread
+    is released (``release_staging(blocking=True)`` in a ``finally``),
+    and not only for memory hygiene: banded staging persists plan
+    fragments built over a table PATH, and Spark's cache manager
+    substitutes a cached fragment into any later semantically-equal
+    subplan — so the NEXT micro-batch's read of that table would
+    silently resolve to THIS batch's file listing (observed: the dedup
+    ingest admitted wave-2 docs despite wave-1 near dups).  Releasing
+    once the batch's writes have materialized drops the fragments so
+    every batch lists its tables fresh.  Staging that must outlive a
+    batch (a run-wide reference) goes under a named
+    :func:`llm.staging.staging_scope`, which this release leaves
+    alone."""
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            on_batch(batch_df, batch_id)
+        finally:
+            release_staging(blocking=True)
+
+    (
+        stream.writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def run_available_now(
