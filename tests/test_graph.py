@@ -16,7 +16,7 @@ import duckdb
 import pytest
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
-from yelp_review_data_analysis_using_big_data_technologies_spark.operators.graph import pagerank, pagerank_sql
+from yelp_review_data_analysis_using_big_data_technologies_spark.operators.graph import _loop_width, pagerank, pagerank_sql
 
 ITERS = 5
 D = 0.85
@@ -125,6 +125,16 @@ def test_validation():
         pagerank(None, iterations=0)
     with pytest.raises(ValueError, match="damping"):
         pagerank(None, damping=1.5)
+
+
+def test_loop_width_follows_symmetrized_edges():
+    # the loop relations hold both directions of every pair: 1.5M
+    # pairs are 3M directed edges, two ~2M-edge partitions, not one
+    assert _loop_width(1_500_000, 4) == 2
+    assert _loop_width(999_999, 4) == 1
+    assert _loop_width(1_000_001, 4) == 2
+    assert _loop_width(0, 4) == 1
+    assert _loop_width(10**9, 4) == 4
 
 
 def test_partition_invariance(spark):

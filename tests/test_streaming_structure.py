@@ -1,10 +1,12 @@
 """Source-structure guards for the streaming slice (a plain AST scan,
 no Spark): every ``availableNow`` trigger lives in
 ``streaming/windows.py``, the entry module opens its staged-wave
-streams only through ``_wave_stream``, and scratch directories come
-only from ``sources.readers.scratch_dir``.  A new drain, wave source
-or temp-dir recipe has to go through the shared helper instead of
-growing another copy."""
+streams only through ``_wave_stream``, scratch directories come
+only from ``sources.readers.scratch_dir``, and input tables under
+``sf_dir`` are batch-read only in ``sources/readers.py`` (through its
+schema memo).  A new drain, wave source, temp-dir recipe or table
+scan has to go through the shared helper instead of growing another
+copy."""
 
 import ast
 import os
@@ -78,3 +80,61 @@ def test_scratch_dirs_only_from_scratch_dir():
         [ENTRY, *_package_files()], lambda n: _method_call(n, "gettempdir")
     )
     assert sites == [(f"{PKG}/sources/readers.py", "scratch_dir")]
+
+
+def _batch_parquet_read(node):
+    """``spark.read….parquet(…)``: a ``parquet`` call whose receiver
+    chain passes through ``.read`` (``readStream`` does not count)."""
+    if not _method_call(node, "parquet"):
+        return False
+    recv = node.func.value
+    while isinstance(recv, (ast.Call, ast.Attribute)):
+        if isinstance(recv, ast.Attribute) and recv.attr == "read":
+            return True
+        recv = recv.func if isinstance(recv, ast.Call) else recv.value
+    return False
+
+
+def _mentions(expr, names):
+    """Whether ``expr`` reads any of ``names`` (a ``scratch_dir(…)``
+    result is a temp dir, not an input, whatever it is given)."""
+    if isinstance(expr, ast.Call) and getattr(expr.func, "id", None) == "scratch_dir":
+        return False
+    if isinstance(expr, ast.Name) and expr.id in names:
+        return True
+    return any(_mentions(c, names) for c in ast.iter_child_nodes(expr))
+
+
+def _sf_dir_names(fn):
+    """``sf_dir`` plus every name ``fn`` assigns from an expression
+    that mentions one of them, in source order."""
+    names = {"sf_dir"}
+    assigns = sorted(
+        (n for n in ast.walk(fn) if isinstance(n, ast.Assign)),
+        key=lambda n: (n.lineno, n.col_offset),
+    )
+    for a in assigns:
+        if _mentions(a.value, names):
+            names |= {t.id for t in a.targets if isinstance(t, ast.Name)}
+    return names
+
+
+def test_input_tables_read_only_through_readers():
+    readers = f"{PKG}/sources/readers.py"
+    hits = []
+    for path in [ENTRY, *_package_files()]:
+        if path == readers:
+            continue
+        with open(os.path.join(ROOT, path)) as f:
+            tree = ast.parse(f.read())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            names = _sf_dir_names(fn)
+            hits += [
+                (path, fn.name)
+                for node in ast.walk(fn)
+                if _batch_parquet_read(node)
+                and any(_mentions(arg, names) for arg in node.args)
+            ]
+    assert hits == []

@@ -41,6 +41,15 @@ DEFAULT_ITERATIONS = 5
 DEFAULT_DAMPING = 0.85
 
 
+def _loop_width(n_pairs: int, parallelism: int) -> int:
+    """Partition count for PageRank's loop relations: ~2M edges per
+    partition, floor 1, ceiling ``parallelism``.  Sized from the
+    SYMMETRIZED edge bound ``2 * n_pairs`` — each undirected pair
+    becomes two directed edges, so the relations the loop
+    materializes are up to twice the pair count."""
+    return max(1, min(parallelism, -(-2 * n_pairs // 2_000_000)))
+
+
 def pagerank(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -114,9 +123,9 @@ def pagerank(
     # parallelism — at 100 TB the count grows with the graph and this
     # is a no-op.  The count
     # itself is a bounded job over the already-materialized checkpoint.
-    n_edges = base.count()
-    sc = pairs.sparkSession.sparkContext
-    p_loop = max(1, min(sc.defaultParallelism, -(-n_edges // 2_000_000)))
+    p_loop = _loop_width(
+        base.count(), pairs.sparkSession.sparkContext.defaultParallelism
+    )
     if weight is None:
         fwd = base.select(a.alias("__src"), b.alias("__dst"))
         edges = stage(

@@ -6,6 +6,23 @@ an explicit schema, Parquet is the default interchange format (schema
 from footer metadata, column pruning + predicate pushdown free via
 Catalyst), and catalog registration is a temp view instead of a Glue
 crawler (main.tf:28-38).
+
+Schema memo.  The crawler infers a table's schema once and later
+queries read the stored schema; Spark re-infers it on every
+``spark.read.parquet`` without a schema, and inference is a Spark job
+(``mergeSchemasInParallel``) even for a single file — on the small
+reference-ETL queries it was every construction-time job.
+:func:`read_parquet` therefore remembers the schema of each single
+file it infers and hands it back through ``spark.read.schema(s)`` on
+later reads, which launch no job.  An entry is keyed by the file's
+identity (qualified path, length, modification time from the Hadoop
+``FileSystem``, so any scheme works) and by the session values of the
+confs that change the Parquet→Spark type mapping; a rewritten file or
+a flipped conf re-infers, and one entry per path keeps the memo
+bounded by the number of distinct files read.  Directories (their own
+modification time does not follow the files under them on object
+stores) and missing paths (which must keep raising Spark's
+``AnalysisException``) always take the plain inferred read.
 """
 
 from __future__ import annotations
@@ -13,6 +30,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -31,10 +49,51 @@ TABLES = (
 )
 
 
+#: Session confs that change how a Parquet footer maps to a Spark schema.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+)
+
+#: Qualified file path -> (memo key, inferred schema); see the module
+#: docstring.  Entries are replaced whole, never mutated, so two
+#: threads racing on one path at worst both infer.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _file_key(spark: SparkSession, path: str) -> tuple | None:
+    """``(qualified path, length, mtime, conf values)`` of a single
+    file, or ``None`` for a directory or a path that cannot be
+    stat'ed (missing, or refused): those take the plain read, which
+    raises whatever it raised without the memo."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    try:
+        status = fs.getFileStatus(p)
+    except Py4JJavaError:
+        return None
+    if status.isDirectory():
+        return None
+    return (
+        status.getPath().toString(),
+        status.getLen(),
+        status.getModificationTime(),
+        *(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+
+
 def read_parquet(
     spark: SparkSession, path: str, merge_schema: bool = False
 ) -> DataFrame:
     """Columnar scan — pushdown + pruning handled by Catalyst (S2).
+
+    A single file is read through the schema memo (module docstring):
+    its first read infers, later reads of the same unchanged file
+    under the same type-mapping confs launch no Spark job.
 
     ``merge_schema=True`` reconciles EVOLVED schemas across the files
     under ``path`` (a batch written before a column existed reads that
@@ -42,10 +101,17 @@ def read_parquet(
     default: merging reads every footer instead of sampling one, a
     real cost at 100k-file scale, so callers opt in when a table is
     known to have mixed generations."""
-    reader = spark.read
     if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(path)
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    key = _file_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    hit = _SCHEMAS.get(key[0])
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key[0]] = (key, df.schema)
+    return df
 
 
 def read_json(
@@ -142,9 +208,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Spark rejects unless ``spark.sql.legacy.parquet.nanosAsLong`` is
     set — it is runtime-settable, so set it here rather than relying
     on our session factory having built the session.
+
+    The file is read through :func:`read_parquet`'s schema memo: the
+    first load of a table file in a process infers its schema (one
+    Spark job), every later load of the same unchanged file passes
+    the remembered schema and launches none.  A rewritten file (new
+    length or modification time) or a changed type-mapping conf
+    re-infers; a directory or a missing path takes the plain inferred
+    read, so a missing table still raises ``AnalysisException``.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     fix = _TABLE_NORMALIZERS.get(name)
     return fix(df) if fix else df
 

@@ -31,6 +31,7 @@ an incremental backfill.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,10 +39,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
+from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_parquet
 
 #: Explicit stream schema for events.parquet with a ``{ts}`` hole —
 #: streams can't infer, and ``ts``'s declared type must match the
-#: file's physical type (probed per-directory in ``stream_events``).
+#: file's physical type (read per file in ``stream_events``).
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts {ts}, user_id long, event_type string, "
     "value double, props string"
@@ -55,12 +57,12 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixture generations have shipped ``ts`` as both TIMESTAMP(NANOS)
     (a long under ``nanosAsLong``) and TIMESTAMP(MICROS); declaring
     the wrong one silently mis-scales every window by 1000×, so the
-    batch footer is probed first (metadata-only) and the stream schema
-    + conversion follow the file."""
+    file's schema is read first — through the batch reader's schema
+    memo, which infers it at most once per file — and the stream
+    schema + conversion follow the file."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     probe = (
-        spark.read.option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
         .schema["ts"]
         .dataType
     )
