@@ -24,6 +24,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relat
     equi_join,
     semi_join,
 )
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans import analytics, llm_queries
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans.master_table import (
     synthetic_master_table,
@@ -32,6 +33,10 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers
     load_table,
     register_views,
     scratch_dir,
+)
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
+    stream_ann_index_ingest,
+    stream_pq_index_ingest,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import (
     SESSIONIZE_SQL as _SESSIONIZE_ORACLE,
@@ -1396,92 +1401,61 @@ def _q_stream_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 × §2.12 — STREAMING maintenance of the persisted IVF
-    vector index (r12): the well-formed embeddings arrive as three
-    id-ordered micro-batches; the first batch builds the index
-    (freezing the seed coarse quantizer on its ``n_cells``
-    smallest-id vectors — which, for this id-ordered backfill, are
-    the corpus's smallest, so the frozen seeds equal a full-corpus
-    build's), and each later batch delta-merges against the frozen
-    centroids, rewriting only its touched cell partitions with
-    UPSERT-by-id replay safety.  The returned frame is a
-    :func:`llm.vectors.search_ivf_index` over the finished index —
-    hash-checked against the SAME static IVF twin as
-    ``vec_ivf_index_search``, so the driver hash covers the build,
-    three merges, directory pruning, and the search in one entry."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
-    from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
-        _IVF_CELLS,
-        _IVF_PROBE,
-        _TOP_K,
-        _load_embeddings,
-        _query_set,
-    )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
-        stream_ann_index_ingest,
-    )
-
-    emb = _load_embeddings(spark, sf_dir)
+def _index_ingest_entry(
+    spark: SparkSession, sf_dir: str, name: str, ingest, search, **dials
+) -> DataFrame:
+    """§2.10 × §2.12 — STREAMING maintenance of a persisted vector
+    index, the body both index-ingest entries share: the well-formed
+    embeddings arrive as three id-ordered micro-batches; ``ingest``
+    builds the index from the first (freezing its quantizer on that
+    batch — for this id-ordered backfill the seeds equal a full-corpus
+    build's) and delta-merges the later ones, rewriting only touched
+    cell partitions.  The returned frame is ``search`` over the
+    drained index with the frozen params the drain returned."""
+    emb = llm_queries._load_embeddings(spark, sf_dir)
     base, stream = _wave_stream(
-        spark, "ann_ingest", sf_dir,
+        spark, name, sf_dir,
         _id_waves(emb.select("vec_id", "embedding"), "vec_id", _ANN_INGEST_SPLITS),
     )
     idx = os.path.join(base, "index")
-    # r16 opt (guide §2.4): the drain returns the frozen centroids it
-    # built/merged with; the post-drain search threads them instead
-    # of re-collecting (None falls back to read-from-path)
-    cent = stream_ann_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=_IVF_CELLS
+    params = ingest(
+        stream, idx, os.path.join(base, "ckpt"), n_cells=llm_queries._IVF_CELLS
     )
-    return lvec.search_ivf_index(
-        spark, idx, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
-        cent_rows=cent,
+    return search(
+        spark, idx, llm_queries._query_set(emb), k=llm_queries._TOP_K,
+        n_probe=llm_queries._IVF_PROBE, params=params, **dials,
     ).orderBy("query_id", "rk")
 
 
+def _q_stream_ann_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The raw IVF index (r12): each later batch delta-merges against
+    the frozen centroids with UPSERT-by-id replay safety.  The search
+    is :func:`llm.vectors.search_ivf_index`, hash-checked against the
+    SAME static IVF twin as ``vec_ivf_index_search``, so the driver
+    hash covers the build, three merges, directory pruning, and the
+    search in one entry."""
+    return _index_ingest_entry(
+        spark, sf_dir, "ann_ingest", stream_ann_index_ingest,
+        lvec.search_ivf_index,
+    )
+
+
 def _q_stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 × §2.12 — STREAMING maintenance of the persisted IVF-PQ
-    (compressed) index (r14, the r12 verdict's #7): three id-ordered
-    embedding micro-batches; the first builds the index (freezing the
-    seed coarse quantizer AND the PQ codebooks on that batch), each
-    later batch residual-encodes against the frozen parameters and
-    merges — touched code-cell partitions rewrite, the by-id re-rank
+    """The IVF-PQ (compressed) index (r14, the r12 verdict's #7): the
+    first batch also freezes the PQ codebooks; each later batch
+    residual-encodes against the frozen parameters, the by-id re-rank
     relation takes an idempotent append, and a non-identical replay
-    fails loud (the r14 true-update guard).  The returned frame is a
-    :func:`llm.vectors.search_ivfpq_index` over the drained index.
+    fails loud (the r14 true-update guard).  The search is
+    :func:`llm.vectors.search_ivfpq_index`.
 
     Rows-only driver check (codebooks are engine-specific, same class
     as every production-dial PQ entry); the drained-index ≡ frozen-
     parameter full rebuild and the two-wave crash-replay are pinned
     in tests/test_ivfpq_index.py."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
-    from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
-        _IVF_CELLS,
-        _IVF_PROBE,
-        _TOP_K,
-        _load_embeddings,
-        _query_set,
+    return _index_ingest_entry(
+        spark, sf_dir, "pq_ingest", stream_pq_index_ingest,
+        lvec.search_ivfpq_index, rerank=4,
     )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
-        stream_pq_index_ingest,
-    )
-
-    emb = _load_embeddings(spark, sf_dir)
-    base, stream = _wave_stream(
-        spark, "pq_ingest", sf_dir,
-        _id_waves(emb.select("vec_id", "embedding"), "vec_id", _ANN_INGEST_SPLITS),
-    )
-    idx = os.path.join(base, "index")
-    # r16 opt (guide §2.4): the drain returns the frozen parameters;
-    # the post-drain search threads them instead of re-collecting
-    cent, codes = stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=_IVF_CELLS
-    )
-    return lvec.search_ivfpq_index(
-        spark, idx, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
-        rerank=4, cent_rows=cent, by_sub=codes,
-    ).orderBy("query_id", "rk")
 
 
 def _q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

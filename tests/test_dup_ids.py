@@ -125,3 +125,16 @@ def test_twin_agrees_under_dup_ids(spark, dup_ids_dir, duck, name, check):
     finally:
         release_staging()
     assert not problems, "\n".join(problems)
+
+
+def test_sessionize_twin_is_deterministic_under_dup_ids(duck):
+    """Duplicated events share their ``ts`` with the original, so the
+    DuckDB sessionize twin sees tied peers.  The session number must
+    not depend on the order DuckDB happens to give those peers: 300
+    runs of the twin return one result."""
+    sql = entrymod.oracle_sql()["events_sessionize"]
+    seen = {
+        tuple(sorted(duck.execute(sql).fetchall(), key=repr))
+        for _ in range(300)
+    }
+    assert len(seen) == 1

@@ -6,7 +6,9 @@ only from ``sources.readers.scratch_dir``, and input tables under
 ``sf_dir`` are batch-read only in ``sources/readers.py`` (through its
 schema memo).  A new drain, wave source, temp-dir recipe or table
 scan has to go through the shared helper instead of growing another
-copy."""
+copy.  The same holds for a persisted vector index's frozen state:
+only ``llm.vectors.read_index_params`` reads it back from disk, and
+callers hand it around as one ``IndexParams`` value."""
 
 import ast
 import os
@@ -138,3 +140,48 @@ def test_input_tables_read_only_through_readers():
                 and any(_mentions(arg, names) for arg in node.args)
             ]
     assert hits == []
+
+
+def _names_text(expr, words):
+    """Whether a string literal (or f-string part) in ``expr`` contains
+    any of ``words``."""
+    return any(
+        isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and any(w in n.value for w in words)
+        for n in ast.walk(expr)
+    )
+
+
+def test_index_frozen_state_read_only_in_read_index_params():
+    vectors = f"{PKG}/llm/vectors.py"
+    sites = _sites(
+        [ENTRY, *_package_files()],
+        lambda n: _batch_parquet_read(n)
+        and any(_names_text(a, ("centroids", "codebooks")) for a in n.args),
+    )
+    assert sites == [
+        (vectors, "read_index_params"),
+        (vectors, "read_index_params"),
+    ]
+
+
+def test_no_call_passes_frozen_state_piecewise():
+    tests = os.path.relpath(os.path.dirname(os.path.abspath(__file__)), ROOT)
+    paths = [
+        ENTRY,
+        "bench.py",
+        *_package_files(),
+        *(
+            os.path.join(d, f)
+            for d in (tests, "scripts")
+            for f in sorted(os.listdir(os.path.join(ROOT, d)))
+            if f.endswith(".py")
+        ),
+    ]
+    sites = _sites(
+        paths,
+        lambda n: isinstance(n, ast.keyword)
+        and n.arg in ("cent_rows", "by_sub", "stored_meta"),
+    )
+    assert sites == []

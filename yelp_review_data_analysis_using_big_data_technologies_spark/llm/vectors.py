@@ -17,16 +17,36 @@ Two retrieval strategies:
   (sign) LSH buckets both sides; each query only scores its bucket.
   Planes are fixed literals (deterministic, engine-portable); recall
   is tunable via ``n_planes``.
+
+Persisted IVF indexes run one lifecycle — build, delta merge, erase,
+compact, search (unfiltered or filtered) — written once over a small
+cell codec (:class:`_CellCodec`).  *Raw* cells store ``(id, *meta,
+__v, __n)`` under ``{path}/cells`` and score exact cosine; *PQ* cells
+store ``(id, *meta, __n, __codes)`` under ``{path}/codes``, score by
+ADC table lookup and re-rank survivors against the by-id
+``{path}/vectors``.  Both partition by ``cell_id``: a probe is
+directory pruning.  The quantizer (centroids, PQ codebooks) is
+FROZEN at build time — one :class:`IndexParams` value, returned by the
+builders and streaming ingests and taken by every merge and search as
+``params`` (no per-call re-read; doubles round-trip parquet exactly,
+so results are identical either way).  Without ``params`` a call
+reads it back through :func:`read_index_params`, the only reader of
+``centroids`` and ``codebooks``.  The metadata columns a delta must
+carry are the stored cell schema's, read by the merge itself.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Sequence
+from functools import reduce
+from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
+
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
+from yelp_review_data_analysis_using_big_data_technologies_spark.sources import writers
 
 #: Fixed random hyperplanes for sign-LSH, generated once from a seeded
 #: RNG and frozen as literals so Spark, the SQL oracle, and re-runs all
@@ -208,6 +228,31 @@ def _seed_centroid_rows(
     return [
         (i, [float(x) for x in r["__v"]]) for i, r in enumerate(seeds)
     ]
+
+
+def _coarse_rows(
+    corpus: DataFrame, id_col: str, n_cells: int, centroids: DataFrame | None
+) -> list[tuple[int, list[float]]]:
+    """The coarse quantizer's rows: the given ``centroids`` frame if
+    any, else the seed quantizer over ``corpus``."""
+    if centroids is not None:
+        return _collect_centroids(centroids)
+    return _seed_centroid_rows(corpus, id_col, n_cells)
+
+
+def _vector_corpus(
+    df: DataFrame, id_col: str, vec_col: str, meta: Sequence[str] = ()
+) -> DataFrame:
+    """The well-formed vector rows of ``df`` as ``(id, *meta, __v,
+    __n)`` — ``__n`` the precomputed norm, so each centroid score is
+    one dot pass."""
+    vcast = F.col(vec_col).cast("array<double>")
+    return df.filter(finite_vec(vec_col)).select(
+        F.col(id_col),
+        *[F.col(c) for c in meta],
+        vcast.alias("__v"),
+        norm(vcast).alias("__n"),
+    )
 
 
 def _probe_frame(
@@ -447,8 +492,6 @@ def mmr_rerank_candidates(
         raise ValueError(f"k must be >= 1, got {k}")
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
-
     rel = cand_rel.select(query_id_col, id_col, "rel")
     vecs = embeddings.filter(finite_vec(vec_col)).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
@@ -753,6 +796,63 @@ def _band_planes(n_bands: int, n_planes: int) -> list[list[list[float]]]:
     ]
 
 
+def _band_side(
+    df: DataFrame, id_col: str, vec_col: str, bands: list
+) -> tuple[DataFrame, DataFrame]:
+    """One side of a banded sign-LSH join: the staged ``(__id, __v,
+    __n)`` vectors and their ``(__id, __band, __bucket)`` keys.
+
+    Staged via the registry: the plan reads the vectors once for the
+    keys and once per verification side — without the cache the
+    corpus parquet is scanned once per reference.  The row norm is
+    staged per VECTOR, not recomputed per candidate pair: the
+    higher-order-function aggregates are interpreted (not codegen'd),
+    and the candidate set is ~bands·buckets·pop² pairs, so paying 3
+    HOF passes per pair instead of 1 tripled the verify cost
+    (bitwise-identical result — same norm expression, computed once)."""
+    vcast = F.col(vec_col).cast("array<double>")
+    base = stage(
+        df.select(
+            F.col(id_col).alias("__id"),
+            vcast.alias("__v"),
+            norm(vcast).alias("__n"),
+        )
+    )
+    keys = base.select(
+        "__id",
+        F.posexplode(
+            F.array(*[sign_bucket("__v", planes) for planes in bands])
+        ).alias("__band", "__bucket"),
+    )
+    return base, keys
+
+
+def _band_verified(
+    cands: DataFrame,
+    base_a: DataFrame,
+    base_b: DataFrame,
+    a: str,
+    b: str,
+    cos_col: str,
+) -> DataFrame:
+    """Candidate pairs ``(a, b)`` with their exact 6-dp cosine in
+    ``cos_col``, the vectors fetched by id from each side's base."""
+    return (
+        cands.join(
+            base_a.withColumnsRenamed({"__id": a, "__v": "__va", "__n": "__na"}),
+            on=a,
+        )
+        .join(
+            base_b.withColumnsRenamed({"__id": b, "__v": "__vb", "__n": "__nb"}),
+            on=b,
+        )
+        .withColumn(
+            cos_col,
+            F.round(dot("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6),
+        )
+    )
+
+
 def cosine_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.4,
@@ -776,36 +876,13 @@ def cosine_near_dup_pairs(
     no all-pairs at any corpus size.  More bands buy recall at
     linear candidate cost; more planes shrink buckets.
     """
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
-
     # NULL vectors carry no geometry: excluded before the corpus count
     # that derives the plane dial and before staging
     embeddings = embeddings.filter(finite_vec(vec_col))
     if n_planes is None:
         n_planes = derive_n_planes(embeddings.count(), target_bucket_size)
     bands = _band_planes(n_bands, n_planes)
-    # staged via the registry: the plan reads this relation three times
-    # (band keys + both verification sides) — without the cache the
-    # corpus parquet is scanned once per reference.  The row norm is
-    # staged per VECTOR, not recomputed per candidate pair: the
-    # higher-order-function aggregates are interpreted (not codegen'd),
-    # and the candidate set is ~bands·buckets·pop² pairs, so paying 3
-    # HOF passes per pair instead of 1 tripled the verify cost
-    # (bitwise-identical result — same norm expression, computed once).
-    vcast = F.col(vec_col).cast("array<double>")
-    base = stage(
-        embeddings.select(
-            F.col(id_col).alias("__id"),
-            vcast.alias("__v"),
-            norm(vcast).alias("__n"),
-        )
-    )
-    keys = base.select(
-        "__id",
-        F.posexplode(
-            F.array(*[sign_bucket("__v", planes) for planes in bands])
-        ).alias("__band", "__bucket"),
-    )
+    base, keys = _band_side(embeddings, id_col, vec_col, bands)
     # Candidate pairs are NOT pre-deduped across bands: deduping first
     # costs a full shuffle of the (large) candidate set, while a pair
     # sharing k>1 bands merely re-verifies k times — and only genuinely
@@ -820,24 +897,7 @@ def cosine_near_dup_pairs(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
     )
     return (
-        cands.join(
-            base.withColumnsRenamed(
-                {"__id": "id_a", "__v": "__va", "__n": "__na"}
-            ),
-            on="id_a",
-        )
-        .join(
-            base.withColumnsRenamed(
-                {"__id": "id_b", "__v": "__vb", "__n": "__nb"}
-            ),
-            on="id_b",
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6
-            ),
-        )
+        _band_verified(cands, base, base, "id_a", "id_b", "cos_sim")
         .filter(F.col("cos_sim") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "cos_sim")
@@ -870,8 +930,6 @@ def cosine_dedup_delta(
     so expected bucket population stays ~``target_bucket_size`` as
     the corpus grows.  Returns ``delta`` rows (original columns)
     that were admitted."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
-
     corpus = corpus.filter(finite_vec(vec_col))
     delta_ok = delta.filter(finite_vec(vec_col))
     if n_planes is None:
@@ -879,57 +937,22 @@ def cosine_dedup_delta(
             corpus.count() + delta_ok.count(), target_bucket_size
         )
     bands = _band_planes(n_bands, n_planes)
-    vcast = F.col(vec_col).cast("array<double>")
-
-    def _proj(df: DataFrame) -> DataFrame:
-        out = stage(
-            df.select(
-                F.col(id_col).alias("__id"),
-                vcast.alias("__v"),
-                norm(vcast).alias("__n"),
-            )
-        )
-        return out
-
-    def _keys(base: DataFrame) -> DataFrame:
-        return base.select(
-            "__id",
-            F.posexplode(
-                F.array(*[sign_bucket("__v", planes) for planes in bands])
-            ).alias("__band", "__bucket"),
-        )
-
-    base_c, base_d = _proj(corpus), _proj(delta_ok)
+    base_c, keys_c = _band_side(corpus, id_col, vec_col, bands)
+    base_d, keys_d = _band_side(delta_ok, id_col, vec_col, bands)
     # R-S candidates: delta keys × corpus keys within a (band, bucket)
     # — duplicate band collisions re-verify rather than pre-dedup (the
     # cosine_near_dup_pairs rationale); the distinct runs on matched
     # delta ids only (the small survivor set).
     cands = (
-        _keys(base_d)
-        .withColumnsRenamed({"__id": "__id_d"})
+        keys_d.withColumnsRenamed({"__id": "__id_d"})
         .join(
-            _keys(base_c).withColumnsRenamed({"__id": "__id_c"}),
+            keys_c.withColumnsRenamed({"__id": "__id_c"}),
             on=["__band", "__bucket"],
         )
         .select("__id_d", "__id_c")
     )
     matched = (
-        cands.join(
-            base_d.withColumnsRenamed(
-                {"__id": "__id_d", "__v": "__vd", "__n": "__nd"}
-            ),
-            on="__id_d",
-        )
-        .join(
-            base_c.withColumnsRenamed(
-                {"__id": "__id_c", "__v": "__vc", "__n": "__nc"}
-            ),
-            on="__id_c",
-        )
-        .withColumn(
-            "__cos",
-            F.round(dot("__vd", "__vc") / (F.col("__nd") * F.col("__nc")), 6),
-        )
+        _band_verified(cands, base_d, base_c, "__id_d", "__id_c", "__cos")
         .filter(F.col("__cos") >= threshold)
         .select(F.col("__id_d").alias(id_col))
         .distinct()
@@ -1125,20 +1148,11 @@ def top_k_ann_ivf(
     per-query top-k shuffle.  The round-3 shape paid three separate
     parquet scans plus an arg-max shuffle of the full vector column —
     measured 1.9× slower at sf0.1."""
-    from .staging import stage
-
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        # Deterministic seed quantizer: the n_cells smallest-id vectors
-        # (bounded TakeOrdered collect, materializes the staged corpus).
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
+    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
+    # Deterministic seed quantizer unless centroids are given: the
+    # n_cells smallest-id vectors (bounded TakeOrdered collect,
+    # materializes the staged corpus).
+    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
     assigned = _assign_cells_literal(corpus, cent_rows, id_col)
     probes = _probe_frame(
         queries, cent_rows, n_probe, query_id_col, query_vec_col
@@ -1147,7 +1161,7 @@ def top_k_ann_ivf(
         "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
     )
     # cell-bounded candidates — skip the salted prune (see
-    # search_ivf_index; the prune is exact either way, this is perf)
+    # _raw_ranker; the prune is exact either way, this is perf)
     return _rank_top_k(scored, k, query_id_col, id_col, prune_salt=1)
 
 
@@ -1175,37 +1189,13 @@ def top_k_ann_ivf_multidial(
     tests/test_llm.py's recall-profile checks), but the corpus is
     assigned and scored once instead of ``len(probes)`` times.
     Returns ``[(p, top_k_frame), ...]`` in the given dial order."""
-    from .staging import stage
-
-    p_max = max(probes)
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
+    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
     cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
     assigned = _assign_cells_literal(corpus, cent_rows, id_col)
-    # _probe_frame's sorted-slice, with the probe RANK kept: posexplode
-    # of the same descending struct sort's top-p_max prefix
-    qcast = F.col(query_vec_col).cast("array<double>")
-    q = queries.filter(finite_vec(query_vec_col)).select(
-        F.col(query_id_col), qcast.alias("__q"), norm(qcast).alias("__qn")
+    probes_ranked = _probe_frame(
+        queries, cent_rows, max(probes), query_id_col, query_vec_col,
+        rank_col="__pr",
     )
-    probe_cells = F.transform(
-        F.slice(
-            F.sort_array(_cell_scores("__q", "__qn", cent_rows), asc=False),
-            1,
-            p_max,
-        ),
-        lambda c: (-c["nc"]).cast("int"),
-    )
-    probes_ranked = q.select(
-        query_id_col,
-        "__q",
-        "__qn",
-        F.posexplode(probe_cells).alias("__pos", "cell_id"),
-    ).withColumn("__pr", F.col("__pos") + 1).drop("__pos")
     # score once at the widest dial; project to the rank inputs before
     # staging so the cache holds no vector arrays (guide §2.3), and
     # fill it eagerly — every dial's rank leg references it
@@ -1620,555 +1610,6 @@ def _pq_codes_expr(
     return F.expr("array(" + ", ".join(parts) + ")")
 
 
-def build_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-    meta_cols: Sequence[str] = (),
-) -> list:
-    """Materialize a PERSISTED IVF index: the corpus assigned to its
-    coarse cells and written as parquet PARTITIONED BY ``cell_id``
-    (one directory per inverted list), plus the centroid table.
-
-    This is the build-once/search-many shape a deployment actually
-    runs — :func:`top_k_ann_ivf` re-derives the assignment per query
-    set, which is right for ad-hoc checks and wrong for a serving
-    index.  Partitioning by cell is the load-bearing choice: probing
-    becomes DIRECTORY-level partition pruning, so a search touches
-    ``n_probe/n_cells`` of the stored bytes no matter how large the
-    corpus grows (verified by plan test: `PartitionFilters` on
-    ``cell_id``, not a post-scan filter).
-
-    Layout: ``{path}/cells`` — ``(id, *meta_cols, __v, __n)``
-    partitioned by ``cell_id``; ``{path}/centroids`` —
-    ``(cell_id, __c)``.  ``meta_cols`` (r12) carries filterable
-    metadata (language, label, license…) INTO the cell files so a
-    filtered search (:func:`search_ivf_index_filtered`) pushes its
-    predicate down to the pruned scan — at scale the filter must ride
-    the index, not a join back to the corpus.
-    """
-    spark = embeddings.sparkSession
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(id_col),
-        *[F.col(c) for c in meta_cols],
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
-    )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
-    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
-        f"{path}/cells"
-    )
-    spark.createDataFrame(
-        cent_rows, "cell_id int, __c array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    # the frozen quantizer just written — a build-then-merge
-    # maintenance loop threads it into add_to_ivf_index (r16 opt)
-    return cent_rows
-
-
-def add_to_ivf_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent_rows: list | None = None,
-    stored_meta: list[str] | None = None,
-) -> None:
-    """Incremental index maintenance: assign a DELTA batch of vectors
-    to the index's FROZEN centroids and merge them into the persisted
-    cells — the N+δ ingestion shape (`dedup_against_corpus`'s
-    analogue for retrieval).  Only the cell partitions the delta
-    touches are rewritten (dynamic partition overwrite of
-    existing-cell rows ∪ delta rows for those cells); untouched cell
-    directories are never read or written.  Centroids stay fixed —
-    the standard serving trade (drift is handled by periodic rebuild,
-    not per-batch retraining, which would invalidate every stored
-    assignment).
-
-    ``cent_rows`` / ``stored_meta`` (r16 opt, the r15 KS-monitor
-    lesson): the frozen centroids and the stored schema are
-    batch-independent, so a per-run maintenance loop (the streaming
-    ingest drain) collects them once and threads them through every
-    merge — the per-batch centroid read+collect job and schema
-    listing disappear; frozen centroids mean the inlined assignment
-    literals are identical either way.  Default ``None`` keeps the
-    self-contained read-from-``path`` behavior."""
-    spark = delta.sparkSession
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        delete_partition_dirs,
-        overwrite_partitions_dynamic,
-    )
-
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    vcast = F.col(vec_col).cast("array<double>")
-    # The stored schema is the contract: an index built with meta_cols
-    # carries them in every cell file, so the delta must supply the
-    # same columns or the merged partitions would silently lose them.
-    if stored_meta is None:
-        stored_cols = spark.read.parquet(f"{path}/cells").columns
-        stored_meta = [
-            c
-            for c in stored_cols
-            if c not in (id_col, "__v", "__n", "cell_id")
-        ]
-    meta = list(stored_meta)
-    missing = [c for c in meta if c not in delta.columns]
-    if missing:
-        raise ValueError(
-            f"delta is missing index metadata columns {missing}; the "
-            f"stored index at {path!r} carries {meta} in its cell files"
-        )
-    corpus = delta.filter(finite_vec(vec_col)).select(
-        F.col(id_col),
-        *[F.col(c) for c in meta],
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
-    )
-    # Persist the assignment ONCE: the all-centroids dot-product
-    # projection is the expensive step, and without the cache it runs
-    # twice — for the touched-cells collect AND again when the merged
-    # union writes.  Self-contained persist/unpersist (not
-    # localCheckpoint, which cannot be released and would leak a
-    # persistent RDD per streaming micro-batch).
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col).persist()
-    try:
-        new_cells = {
-            r["cell_id"]
-            for r in assigned.select("cell_id").distinct().collect()
-        }
-        # Cells holding PRIOR copies of delta ids: an UPDATED vector
-        # may re-assign to a different cell, and the stale copy must
-        # leave its OLD cell too or a search would surface both.
-        # Narrow column-pruned scan of (id, cell_id) semi-joined to
-        # the bounded delta ids; a production deployment would keep
-        # an id→cell sidecar to turn this into a point lookup.
-        prior_cells = {
-            r["cell_id"]
-            for r in spark.read.parquet(f"{path}/cells")
-            .select(id_col, "cell_id")
-            .join(
-                F.broadcast(assigned.select(id_col).distinct()),
-                on=id_col,
-                how="left_semi",
-            )
-            .select("cell_id")
-            .distinct()
-            .collect()
-        }
-        touched = sorted(new_cells | prior_cells)
-        existing = spark.read.parquet(f"{path}/cells").filter(
-            F.col("cell_id").isin(touched)
-        )
-        # UPSERT by id (r12): existing rows whose id the delta carries
-        # are replaced, so re-adding an id updates its vector — the
-        # contract an index wants — and re-applying the SAME delta
-        # (a streaming foreachBatch replay after failure) is
-        # idempotent.  The anti-join probes only the touched cells'
-        # rows against the (bounded-batch) delta ids.
-        keep = [id_col, *meta, "__v", "__n", "cell_id"]
-        merged = (
-            existing.join(assigned.select(id_col), on=id_col, how="left_anti")
-            .select(*keep)
-            .unionByName(assigned.select(*keep))
-        ).persist()
-        # persist, not localCheckpoint, DESPITE the delete-then-
-        # overwrite below (r14 / ADVICE): this function runs inside
-        # streaming foreachBatch, where a localCheckpoint per
-        # micro-batch leaks an unreleasable RDD.  The trade: if cached
-        # blocks are lost mid-write (executor failure) the recompute
-        # re-lists already-deleted partition files and the BATCH fails
-        # with FileNotFoundException — which is safe, because the merge
-        # is replay-idempotent: the streaming retry (or a batch-caller
-        # rerun) re-applies the same delta onto whatever state the
-        # failed attempt left and converges.  Batch-only maintenance
-        # (delete_from_ivf_index) uses the localCheckpoint pattern
-        # instead.
-        try:
-            # A prior cell can end up with ZERO surviving rows (its only
-            # members were updated ids that re-assigned elsewhere).
-            # Dynamic overwrite writes nothing for such a cell, so its
-            # stale directory would survive and a search would surface
-            # BOTH copies of the moved id — delete emptied cell
-            # partitions explicitly before the overwrite (same contract
-            # as writers.upsert_by_key).
-            present = {
-                r["cell_id"]
-                for r in merged.select("cell_id").distinct().collect()
-            }
-            delete_partition_dirs(
-                spark,
-                f"{path}/cells",
-                ["cell_id"],
-                [(c,) for c in set(touched) - present],
-            )
-            overwrite_partitions_dynamic(merged, f"{path}/cells", ["cell_id"])
-        finally:
-            merged.unpersist(blocking=True)
-    finally:
-        # blocking: async removal would leave the block registered into
-        # the caller's next operation (and trip persistent-RDD audits)
-        assigned.unpersist(blocking=True)
-
-
-def delete_from_ivf_index(
-    delta_ids: DataFrame, path: str, id_col: str = "vec_id"
-) -> None:
-    """Erasure from a persisted ANN index (r13): remove every stored
-    row whose id appears in ``delta_ids`` — the right-to-be-forgotten
-    shape at the INDEX layer.  Deleting a user from the corpus table
-    is not enough once their vectors are serving traffic; the index
-    must forget them too, without a rebuild.
-
-    Only cells holding a target id are rewritten (narrow id+cell
-    column-pruned scan semi-joined to the bounded id batch — the same
-    probe :func:`add_to_ivf_index` uses for upsert); cells emptied by
-    the delete are removed outright rather than left as stale
-    directories.  Covers both layouts in one call: the raw index's
-    ``cells``, the PQ index's ``codes``, and the PQ by-id ``vectors``
-    re-rank relation (unpartitioned — anti-join rewrite through a
-    lineage cut).  Idempotent: re-deleting absent ids touches
-    nothing."""
-    spark = delta_ids.sparkSession
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        delete_partition_dirs,
-        hadoop_path_exists,
-        overwrite_partitions_dynamic,
-    )
-
-    ids = delta_ids.select(id_col).distinct().persist()
-    try:
-        for rel in ("cells", "codes"):
-            p = f"{path}/{rel}"
-            if not hadoop_path_exists(spark, p):
-                continue
-            try:
-                stored = spark.read.parquet(p)
-            except AnalysisException:
-                # Schema-less root (e.g. a _SUCCESS-only directory
-                # left by an interrupted erasure on a pre-tombstone
-                # layout): nothing is stored, so there is nothing to
-                # forget — treat as already-empty instead of failing
-                # the re-run (r15 / ADVICE).
-                continue
-            prior_cells = {
-                r["cell_id"]
-                for r in stored.select(id_col, "cell_id")
-                .join(F.broadcast(ids), on=id_col, how="left_semi")
-                .select("cell_id")
-                .distinct()
-                .collect()
-            }
-            if not prior_cells:
-                continue
-            existing = stored.filter(
-                F.col("cell_id").isin(sorted(prior_cells))
-            )
-            # Batch-maintenance lineage cut (r14 / ADVICE — the
-            # delete_where/upsert_by_key pattern): a .persist() here
-            # would, on cache loss, RECOMPUTE the survivors from a file
-            # listing the delete_partition_dirs below has already
-            # mutated and die with FileNotFoundException mid-erasure;
-            # localCheckpoint materializes once and never re-lists.
-            survivors = existing.join(
-                F.broadcast(ids), on=id_col, how="left_anti"
-            ).localCheckpoint(eager=True)
-            present = {
-                r["cell_id"]
-                for r in survivors.select("cell_id").distinct().collect()
-            }
-            full_erase = False
-            if not present:
-                # every touched cell is about to empty; probe (BEFORE
-                # any file is deleted) whether the touched set covered
-                # the whole relation — if so the root would hold only
-                # _SUCCESS and the next read would fail to infer schema
-                full_erase = prior_cells >= {
-                    r["cell_id"]
-                    for r in stored.select("cell_id").distinct().collect()
-                }
-            doomed = prior_cells - present
-            if full_erase:
-                # FULL erasure (r14 / ADVICE): leave a schema'd
-                # tombstone — one EMPTY parquet file inside a single
-                # cell directory, so partition discovery still sees a
-                # well-formed layout, reads/searches return zero rows,
-                # and a later upsert's dynamic overwrite of cell_id=0
-                # replaces it transparently (the unpartitioned
-                # `vectors` leg already gets this for free from its
-                # empty-but-schema'd rewrite).  Written BEFORE any
-                # directory delete (r15 / ADVICE): the old order could
-                # crash after delete_partition_dirs with the tombstone
-                # unwritten, leaving a _SUCCESS-only root whose next
-                # read fails schema inference — making the erasure
-                # non-re-runnable through exactly the window the
-                # tombstone was added to close.  The overwrite of
-                # cell_id=0 empties that cell itself, so it leaves the
-                # doomed list.
-                survivors.drop("cell_id").repartition(1).write.mode(
-                    "overwrite"
-                ).parquet(f"{p}/cell_id=0")
-                doomed = doomed - {0}
-            delete_partition_dirs(
-                spark,
-                p,
-                ["cell_id"],
-                [(c,) for c in doomed],
-            )
-            if present:
-                overwrite_partitions_dynamic(survivors, p, ["cell_id"])
-        vp = f"{path}/vectors"
-        if hadoop_path_exists(spark, vp):
-            # unpartitioned by-id relation: anti-join rewrite; the
-            # eager lineage cut is what lets the overwrite target the
-            # path being read (upsert_by_key's trade)
-            kept = (
-                spark.read.parquet(vp)
-                .join(F.broadcast(ids), on=id_col, how="left_anti")
-                .localCheckpoint(eager=True)
-            )
-            kept.write.mode("overwrite").parquet(vp)
-    finally:
-        ids.unpersist(blocking=True)
-
-
-def compact_ivf_index(
-    spark, path: str, files_per_cell: int = 1
-) -> None:
-    """Small-file compaction for a persisted ANN index (r13): every
-    delta merge (:func:`add_to_ivf_index` / :func:`add_to_ivfpq_index`)
-    rewrites its touched cells with the write's task parallelism, so a
-    long-running ingest accretes files per cell directory — and a
-    probe pays per file (task launch + footer read), eroding the very
-    directory-pruning advantage the index exists for.  Rewrites each
-    cell to ``files_per_cell`` files through the same dynamic-overwrite
-    compaction as any partitioned table
-    (``sources.writers.compact_partitions``); search results are
-    IDENTICAL before and after (hash-pinned via the shared IVF twin).
-    Covers both layouts: the raw index's ``cells`` and the PQ index's
-    ``codes`` (the unpartitioned ``vectors`` re-rank relation is
-    append-mostly and left to ordinary table compaction)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        compact_partitions,
-        hadoop_path_exists,
-    )
-
-    for rel in ("cells", "codes"):
-        if hadoop_path_exists(spark, f"{path}/{rel}"):
-            compact_partitions(
-                spark, f"{path}/{rel}", ["cell_id"], files_per_cell
-            )
-
-
-def search_ivf_index(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    cent_rows: list | None = None,
-) -> DataFrame:
-    """Top-k search over a :func:`build_ivf_index` index WITHOUT
-    touching the raw corpus: per-query probe cells are chosen
-    map-side against the (bounded, collected) centroid table, the
-    distinct probed cells become a LITERAL ``isin`` filter on the
-    partition column — static partition pruning, only those cell
-    directories are read — and scoring/ranking proceeds exactly as
-    :func:`top_k_ann_ivf`.  With the same centroids and dials the
-    results are identical to the non-persisted operator (and to its
-    SQL oracle twin).
-
-    ``cent_rows`` (r16 opt, guide §2.4): a caller that just built or
-    merged the index can pass the frozen centroid rows it already
-    holds, skipping this search's centroid read+collect job — doubles
-    round-trip parquet exactly, so passing them is byte-identical to
-    re-reading."""
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    probes = _probe_frame(
-        queries, cent_rows, n_probe, query_id_col, query_vec_col
-    )
-    # Bounded collect (≤ |Q|·n_probe ints, ≤ n_cells distinct): the
-    # literal cell list is what turns the probe into directory pruning.
-    cells = sorted(
-        r["cell_id"] for r in probes.select("cell_id").distinct().collect()
-    )
-    stored = spark.read.parquet(f"{path}/cells").filter(
-        F.col("cell_id").isin(cells)
-    )
-    scored = stored.join(F.broadcast(probes), on="cell_id").withColumn(
-        "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-    )
-    # prune_salt=1: per-query candidates are already cell-bounded
-    # (n_probe · max-cell rows), so the salted local top-k would only
-    # add a shuffle — the prune pays on UNBOUNDED scorers (bruteforce,
-    # LSH buckets), not here (measured +0.8 s at sf0.1 for no benefit)
-    return _rank_top_k(scored, k, query_id_col, id_col, prune_salt=1)
-
-
-def probe_ladder(n_probe: int, n_cells: int) -> list[int]:
-    """The deterministic probe-widening ladder for filtered search:
-    ``n_probe, 2·n_probe, 4·n_probe, …`` capped at ``n_cells`` (the
-    final rung always probes everything, so k is guaranteed whenever
-    the filtered corpus holds k rows).  Part of the result contract —
-    the SQL twin derives each query's effective probe count from the
-    same rungs."""
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    ladder: list[int] = []
-    p = n_probe
-    while p < n_cells:
-        ladder.append(p)
-        p *= 2
-    ladder.append(n_cells)
-    return ladder
-
-
-def search_ivf_index_filtered(
-    spark,
-    path: str,
-    queries: DataFrame,
-    where: str,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    cent_rows: list | None = None,
-) -> DataFrame:
-    """FILTERED top-k over a persisted IVF index — the
-    metadata-predicate × ANN composition every vector store serves
-    ("nearest docs WHERE lang='en'"), on the pruned index instead of
-    the full corpus (``vec_filtered_topk`` is the exact-bruteforce
-    form; at 100 TB the filter must ride the index).
-
-    Semantics (PRE-filter, k-guaranteed): per query, the effective
-    probe count is the FIRST rung of :func:`probe_ladder` whose top-p
-    cells contain ≥ k corpus vectors satisfying ``where`` (else the
-    final probe-everything rung), and the result is the exact cosine
-    top-k over the filtered vectors in those cells.  This is the
-    recall contract vector stores document for filtered search: a
-    selective predicate can starve the probed cells, so the search
-    widens deterministically rather than returning < k rows.
-
-    Scale shape: BOTH predicates reach the scan — ``cell_id isin``
-    as PartitionFilters (directory pruning) and ``where`` as a pushed
-    data filter (pinned in tests/test_plans.py) — so rung t reads
-    ``min(2^t·n_probe, n_cells)/n_cells`` of the index bytes and only
-    STARVED queries escalate (the per-rung candidate count is a
-    bounded ≤|Q|-row collect off the staged rung relation; |Q| is the
-    probe-batch dial, the codebook class of driver-side state).  The
-    widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
-    """
-    from .staging import stage
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    ladder = probe_ladder(n_probe, len(cent_rows))
-    # ONE ranked probe frame at the WIDEST rung (r16 opt, guide §1.2
-    # — the multidial prefix-derivation lesson): rung p's probe rows
-    # are exactly ``__pr <= p`` of the descending cell ordering, so
-    # the per-rung probe construction and the per-rung probed-cells
-    # collect both collapse into one bounded job here
-    # (|Q|·n_cells rows — dials, not data).  Queries with non-finite
-    # vectors have no probe rows and can never produce output in
-    # either shape, so they drop from ``pending`` up front.
-    probes_all = _probe_frame(
-        queries,
-        cent_rows,
-        ladder[-1],
-        query_id_col,
-        query_vec_col,
-        rank_col="__pr",
-    )
-    probe_rows = probes_all.select(
-        query_id_col, "cell_id", "__pr"
-    ).collect()
-    pending = {r[query_id_col] for r in probe_rows}
-    parts: list[DataFrame] = []
-    for p in ladder:
-        if not pending:
-            break
-        probes = probes_all.filter(
-            F.col(query_id_col).isin(*pending) & (F.col("__pr") <= p)
-        ).drop("__pr")
-        cells = sorted(
-            {
-                r["cell_id"]
-                for r in probe_rows
-                if r[query_id_col] in pending and r["__pr"] <= p
-            }
-        )
-        stored = (
-            spark.read.parquet(f"{path}/cells")
-            .filter(F.col("cell_id").isin(cells))
-            .filter(F.expr(where))
-        )
-        scored = stage(
-            stored.join(F.broadcast(probes), on="cell_id").withColumn(
-                "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
-            )
-        )
-        counts = {
-            r[query_id_col]: r["__nc"]
-            for r in scored.groupBy(query_id_col)
-            .agg(F.count(F.lit(1)).alias("__nc"))
-            .collect()
-        }
-        done = (
-            set(pending)
-            if p == ladder[-1]
-            else {q for q in pending if counts.get(q, 0) >= k}
-        )
-        if done:
-            parts.append(
-                _rank_top_k(
-                    scored.filter(F.col(query_id_col).isin(*done)),
-                    k,
-                    query_id_col,
-                    id_col,
-                    prune_salt=1,
-                )
-            )
-        pending -= done
-    if not parts:
-        # no queries survived the id collect (empty/NULL-id batch):
-        # return an empty frame with the ranked-output contract types
-        probes = _probe_frame(
-            queries, cent_rows, ladder[0], query_id_col, query_vec_col
-        )
-        empty = (
-            spark.read.parquet(f"{path}/cells")
-            .filter(F.lit(False))
-            .join(F.broadcast(probes), on="cell_id")
-            .withColumn("__cos", dot("__v", "__q"))
-        )
-        return _rank_top_k(empty, k, query_id_col, id_col, prune_salt=1)
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
-
-
 def top_k_ann_ivfpq(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -2221,20 +1662,36 @@ def top_k_ann_ivfpq(
     Rows-only for the driver (KMeans codebooks are engine-specific);
     recall@k vs :func:`top_k_bruteforce` is pinned by unit tests.
     """
-    from .staging import stage
+    corpus, cand = _ivfpq_in_memory(
+        embeddings, queries, n_cells, n_probe, m, k_codes, id_col, vec_col,
+        query_id_col, query_vec_col, centroids, codebooks, seed,
+    )
+    return _adc_rank_joined(cand, corpus, k, rerank, id_col, query_id_col)
 
-    vcast = F.col(vec_col).cast("array<double>")
+
+def _ivfpq_in_memory(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    n_cells: int,
+    n_probe: int,
+    m: int,
+    k_codes: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    centroids: DataFrame | None,
+    codebooks: DataFrame | None,
+    seed: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The in-memory IVF-PQ index both :func:`top_k_ann_ivfpq` and
+    :func:`top_k_ann_ivfpq_multirerank` search: returns the staged
+    ``(id, __v, __n)`` corpus (the exact re-rank side) and the
+    code×probe join the ADC epilogue scores."""
     # Staged: the corpus projection has two consumers (PQ encode, exact
     # re-rank by id); the registry releases it after materialization.
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
+    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
+    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
     assigned = _assign_cells_literal(corpus, cent_rows, id_col)
     # Residual frame: v − centroid(cell) (:func:`_residual_frame` —
     # one literal array-of-arrays lookup, no join).  STAGED: its
@@ -2264,11 +1721,10 @@ def top_k_ann_ivfpq(
         "__n",
         _pq_codes_expr("__r", by_sub).alias("__codes"),
     )
-
     probes = _adc_probes(
         queries, cent_rows, by_sub, n_probe, query_id_col, query_vec_col
     )
-    return _adc_rank(encoded, corpus, probes, k, rerank, id_col, query_id_col)
+    return corpus, encoded.join(F.broadcast(probes), on="cell_id")
 
 
 def _adc_probes(
@@ -2325,28 +1781,26 @@ def _adc_probes(
     )
 
 
-def _adc_rank(
-    encoded: DataFrame,
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int,
-    rerank: int,
-    id_col: str,
-    query_id_col: str,
+def _adc_candidates(
+    cand: DataFrame, cut: int, id_col: str, query_id_col: str
 ) -> DataFrame:
-    """The ADC scoring + exact-re-rank epilogue shared by
-    :func:`top_k_ann_ivfpq` and :func:`search_ivfpq_index`:
-    approximate score = one table lookup per subspace against the
-    broadcast probe frame, top ``rerank·k`` candidates per query
-    fetch their raw vectors BY ID (at scale: a sparse point-lookup
-    join, not a corpus scan) for exact-cosine ordering."""
-    return _adc_rank_joined(
-        encoded.join(F.broadcast(probes), on="cell_id"),
-        corpus,
-        k,
-        rerank,
-        id_col,
-        query_id_col,
+    """The ADC approximate score over a code×probe join — one table
+    lookup per subspace — and each query's top ``cut`` candidates by
+    it, ranked ``__crk`` under (approx DESC, id ASC)."""
+    # Bracket indexing (GetArrayItem) is 0-based, matching the 0-based
+    # lambda index j and code values directly.
+    approx = F.expr(
+        "__bd + aggregate(transform(__codes, (c, j) -> __tab[j][c]), "
+        "cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
+    ) / (F.col("__n") * F.col("__qn"))
+    cand_w = Window.partitionBy(query_id_col).orderBy(
+        F.desc("__approx"), F.asc(id_col)
+    )
+    return (
+        cand.withColumn("__approx", approx)
+        .withColumn("__crk", F.row_number().over(cand_w))
+        .filter(F.col("__crk") <= cut)
+        .select(query_id_col, id_col, "__q", "__qn", "__crk")
     )
 
 
@@ -2358,25 +1812,13 @@ def _adc_rank_joined(
     id_col: str,
     query_id_col: str,
 ) -> DataFrame:
-    """ADC epilogue over an ALREADY code×probe-joined frame — split
-    out of :func:`_adc_rank` so the filtered searcher (r14) can stage
-    the join once for both the starvation count and the ranking."""
-    # Bracket indexing (GetArrayItem) is 0-based, matching the 0-based
-    # lambda index j and code values directly.
-    approx = F.expr(
-        "__bd + aggregate(transform(__codes, (c, j) -> __tab[j][c]), "
-        "cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    ) / (F.col("__n") * F.col("__qn"))
-    cand_w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__approx"), F.asc(id_col)
-    )
-    candidates = (
-        cand.withColumn("__approx", approx)
-        .withColumn("__crk", F.row_number().over(cand_w))
-        .filter(F.col("__crk") <= rerank * k)
-        .select(query_id_col, id_col, "__q", "__qn")
-    )
-    rer = candidates.join(corpus, on=id_col).withColumn(
+    """The ADC scoring + exact-re-rank epilogue of every IVF-PQ
+    searcher, over an ALREADY code×probe-joined frame: the top
+    ``rerank·k`` candidates per query fetch their raw vectors BY ID
+    (at scale: a sparse point-lookup join, not a corpus scan) for
+    exact-cosine ordering."""
+    candidates = _adc_candidates(cand, rerank * k, id_col, query_id_col)
+    rer = candidates.drop("__crk").join(corpus, on=id_col).withColumn(
         "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
     )
     return _rank_top_k(rer, k, query_id_col, id_col)
@@ -2409,51 +1851,13 @@ def top_k_ann_ivfpq_multirerank(
     window order, so every dial's rows equal the independent
     :func:`top_k_ann_ivfpq` call's (same ADC table, same cosine, same
     final tie-break).  Returns ``[(r, top_k_frame), ...]``."""
-    from .staging import stage
-
-    r_max = max(reranks)
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
-    resid = stage(_residual_frame(assigned, cent_rows, id_col))
-    if codebooks is None:
-        codebooks = train_pq_codebooks(
-            resid, m=m, k=k_codes, vec_col="__r", seed=seed
-        )
-    corpus.count()
-    resid.count()
-    by_sub = _collect_codebooks(codebooks)
-    encoded = resid.select(
-        id_col,
-        "cell_id",
-        "__n",
-        _pq_codes_expr("__r", by_sub).alias("__codes"),
-    )
-    probes = _adc_probes(
-        queries, cent_rows, by_sub, n_probe, query_id_col, query_vec_col
+    corpus, cand = _ivfpq_in_memory(
+        embeddings, queries, n_cells, n_probe, m, k_codes, id_col, vec_col,
+        query_id_col, query_vec_col, centroids, codebooks, seed,
     )
     # _adc_rank_joined's epilogue at the widest cut, keeping __crk
-    cand = encoded.join(F.broadcast(probes), on="cell_id")
-    approx = F.expr(
-        "__bd + aggregate(transform(__codes, (c, j) -> __tab[j][c]), "
-        "cast(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-    ) / (F.col("__n") * F.col("__qn"))
-    cand_w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__approx"), F.asc(id_col)
-    )
-    candidates = (
-        cand.withColumn("__approx", approx)
-        .withColumn("__crk", F.row_number().over(cand_w))
-        .filter(F.col("__crk") <= r_max * k)
-        .select(query_id_col, id_col, "__q", "__qn", "__crk")
+    candidates = _adc_candidates(
+        cand, max(reranks) * k, id_col, query_id_col
     )
     rer = stage(
         candidates.join(corpus, on=id_col).withColumn(
@@ -2486,14 +1890,9 @@ def _residual_frame(
     index builder, and the standalone trainer.  ``extra_cols`` (r14)
     rides filterable metadata through to the code files for the
     filtered searcher."""
-    cents_mat = _sql_matrix([c for _cid, c in cent_rows])
-    return assigned.withColumn(
-        "__r",
-        F.expr(
-            f"zip_with(__v, element_at({cents_mat}, cell_id + 1), "
-            "(x, y) -> x - y)"
-        ),
-    ).select(id_col, *extra_cols, "cell_id", "__n", "__r")
+    return assigned.withColumn("__r", _residual_expr(cent_rows)).select(
+        id_col, *extra_cols, "cell_id", "__n", "__r"
+    )
 
 
 def train_ivfpq_params(
@@ -2512,15 +1911,8 @@ def train_ivfpq_params(
     operator per leg otherwise re-trains the IDENTICAL seeded
     codebooks every time (the r12 recall-curve entry measured ~40% of
     its wall clock in redundant trainings)."""
-    from .staging import stage
-
     spark = embeddings.sparkSession
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-        )
-    )
+    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
     cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
     resid = _residual_frame(
         _assign_cells_literal(corpus, cent_rows, id_col), cent_rows, id_col
@@ -2532,6 +1924,295 @@ def train_ivfpq_params(
         cent_rows, "cell_id int, __c array<double>"
     )
     return centroids, codebooks
+
+
+class IndexParams(NamedTuple):
+    """The frozen state of a persisted index (see the module docstring).
+
+    - ``cent_rows``: the coarse quantizer, ``[(cell_id, centroid)]``
+      sorted by cell id;
+    - ``by_sub``: the PQ codebooks ``{subspace: [(code, centroid)]}``,
+      ``None`` for a raw index.
+    """
+
+    cent_rows: list
+    by_sub: dict | None
+
+
+class _CellCodec(NamedTuple):
+    """How one index layout stores and scores its cells; the lifecycle
+    (:func:`_merge`, :func:`_search`) is written once over it.
+
+    - ``rel``: the cell relation under the index path (by cell_id);
+    - ``payload``: its columns besides the id, metadata and cell_id;
+    - ``encode(assigned, params)``: adds the payload columns;
+    - ``probes(queries, params, n_probe, qid, qvec, rank_col)``: the
+      per-query probe rows;
+    - ``ranker(spark, path, k, rerank, id_col, qid)``: a function from
+      a cell×probe join to the ranked top-k;
+    - ``guard(stored, encoded, path, id_col)``: the contract leg run
+      before a merge; returns extra cells the merge must rewrite;
+    - ``write(merged, encoded, touched, path, id_col)``: the contract
+      leg that writes the merge.
+    """
+
+    rel: str
+    payload: tuple
+    encode: Callable
+    probes: Callable
+    ranker: Callable
+    guard: Callable
+    write: Callable
+
+
+def _residual_expr(cent_rows: list) -> Column:
+    """``v − centroid(cell)`` over ``__v``/``cell_id`` via one literal
+    matrix lookup (no join)."""
+    cents_mat = _sql_matrix([c for _cid, c in cent_rows])
+    return F.expr(
+        f"zip_with(__v, element_at({cents_mat}, cell_id + 1), "
+        "(x, y) -> x - y)"
+    )
+
+
+def _raw_ranker(spark, path, k, rerank, id_col, query_id_col):
+    # prune_salt=1: per-query candidates are already cell-bounded
+    # (n_probe · max-cell rows), so the salted local top-k would only
+    # add a shuffle — the prune pays on UNBOUNDED scorers (bruteforce,
+    # LSH buckets), not here (measured +0.8 s at sf0.1 for no benefit)
+    return lambda cand: _rank_top_k(
+        cand.withColumn(
+            "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
+        ),
+        k,
+        query_id_col,
+        id_col,
+        prune_salt=1,
+    )
+
+
+def _pq_ranker(spark, path, k, rerank, id_col, query_id_col):
+    vectors = spark.read.parquet(f"{path}/vectors")
+    return lambda cand: _adc_rank_joined(
+        cand, vectors, k, rerank, id_col, query_id_col
+    )
+
+
+def _cells_holding(stored: DataFrame, ids: DataFrame, id_col: str) -> set:
+    """The cells of ``stored`` holding any of the (bounded, distinct)
+    ``ids``: a narrow column-pruned scan of (id, cell_id) semi-joined
+    to the broadcast ids; a production deployment would keep an
+    id→cell sidecar to turn this into a point lookup."""
+    return {
+        r["cell_id"]
+        for r in stored.select(id_col, "cell_id")
+        .join(F.broadcast(ids), on=id_col, how="left_semi")
+        .select("cell_id")
+        .distinct()
+        .collect()
+    }
+
+
+def _raw_write(merged, encoded, touched, path, id_col) -> None:
+    spark = merged.sparkSession
+    # persist, not localCheckpoint, DESPITE the delete-then-overwrite
+    # below (r14 / ADVICE): merges run inside streaming foreachBatch,
+    # where a localCheckpoint per micro-batch leaks an unreleasable
+    # RDD.  The trade: if cached blocks are lost mid-write (executor
+    # failure) the recompute re-lists already-deleted partition files
+    # and the BATCH fails with FileNotFoundException — which is safe,
+    # because the merge is replay-idempotent: the streaming retry (or
+    # a batch-caller rerun) re-applies the same delta onto whatever
+    # state the failed attempt left and converges.  Batch-only
+    # maintenance (delete_from_ivf_index) uses the localCheckpoint
+    # pattern instead.
+    merged = merged.persist()
+    try:
+        # A prior cell can end up with ZERO surviving rows (its only
+        # members were updated ids that re-assigned elsewhere).
+        # Dynamic overwrite writes nothing for such a cell, so its
+        # stale directory would survive and a search would surface
+        # BOTH copies of the moved id — delete emptied cell partitions
+        # explicitly before the overwrite (same contract as
+        # writers.upsert_by_key).
+        present = {
+            r["cell_id"]
+            for r in merged.select("cell_id").distinct().collect()
+        }
+        writers.delete_partition_dirs(
+            spark,
+            f"{path}/cells",
+            ["cell_id"],
+            [(c,) for c in set(touched) - present],
+        )
+        writers.overwrite_partitions_dynamic(merged, f"{path}/cells", ["cell_id"])
+    finally:
+        merged.unpersist(blocking=True)
+
+
+def _pq_reject_updates(stored, encoded, path, id_col) -> set:
+    """REJECT-UPDATE leg (r14 / ADVICE): an overlapping id whose delta
+    vector differs from its STORED vector would half-apply (new code,
+    stale re-rank vector), so a mismatch raises.  Cost contract (r15 /
+    ADVICE): the probe is an id-COLUMN-only scan of the by-id relation
+    per batch — O(index) rows but the narrowest possible parquet read,
+    the same scan shape the idempotent vectors append already pays for
+    its anti-join.  The full ``__v`` comparison (wide array column)
+    runs ONLY when the probe finds overlapping ids, i.e. on replays
+    and true updates — the common all-new-ids batch never reads a
+    stored vector.  A codes-side touched-cells probe would NOT be a
+    sound short-circuit: a changed vector can assign to a DIFFERENT
+    coarse cell, so its stored code sits outside the touched set while
+    the half-apply hazard is live; the by-id relation is the one place
+    every stored id appears exactly once.  Frozen parameters make a
+    replayed id re-encode into the SAME cell, so the merge needs no
+    extra cells."""
+    spark = encoded.sparkSession
+    vectors = spark.read.parquet(f"{path}/vectors")
+    overlap = (
+        vectors.select(id_col)
+        .join(
+            F.broadcast(encoded.select(id_col).distinct()),
+            on=id_col,
+            how="left_semi",
+        )
+        .head(1)
+    )
+    conflicts = (
+        [
+            r[id_col]
+            for r in vectors.select(id_col, F.col("__v").alias("__stored"))
+            .join(
+                F.broadcast(encoded.select(id_col, "__v")),
+                on=id_col,
+                how="inner",
+            )
+            .filter(F.col("__stored") != F.col("__v"))
+            .select(id_col)
+            .head(5)
+        ]
+        if overlap
+        else []
+    )
+    if conflicts:
+        raise ValueError(
+            "add_to_ivfpq_index got CHANGED vectors for ids already "
+            f"in the index at {path!r} (e.g. {conflicts}); deltas "
+            "must be new ids or byte-identical replays — route true "
+            "updates through delete_from_ivf_index + re-add, or a "
+            "rebuild"
+        )
+    return set()
+
+
+def _pq_write(merged, encoded, touched, path, id_col) -> None:
+    spark = merged.sparkSession
+    writers.overwrite_partitions_dynamic(merged, f"{path}/codes", ["cell_id"])
+    # Idempotent append: anti-join against the relation's OWN id set
+    # (column-pruned scan; append-while-read is legal — only overwrite
+    # conflicts), so a replayed batch appends zero rows no matter
+    # where the prior attempt crashed.
+    encoded.select(id_col, "__v", "__n").join(
+        spark.read.parquet(f"{path}/vectors").select(id_col),
+        on=id_col,
+        how="left_anti",
+    ).write.mode("append").parquet(f"{path}/vectors")
+
+
+_RAW = _CellCodec(
+    rel="cells",
+    payload=("__v", "__n"),
+    encode=lambda assigned, params: assigned,
+    probes=lambda queries, params, *dials: _probe_frame(
+        queries, params.cent_rows, *dials
+    ),
+    ranker=_raw_ranker,
+    # UPSERT leg: also rewrite the cells holding PRIOR copies of delta
+    # ids — an updated vector may re-assign to another cell, and its
+    # stale copy must leave the old one or a search surfaces both
+    guard=lambda stored, encoded, path, id_col: _cells_holding(
+        stored, encoded.select(id_col).distinct(), id_col
+    ),
+    write=_raw_write,
+)
+
+_PQ = _CellCodec(
+    rel="codes",
+    payload=("__n", "__codes"),
+    encode=lambda assigned, params: assigned.withColumn(
+        "__r", _residual_expr(params.cent_rows)
+    )
+    .withColumn("__codes", _pq_codes_expr("__r", params.by_sub))
+    .drop("__r"),
+    probes=lambda queries, params, *dials: _adc_probes(
+        queries, params.cent_rows, params.by_sub, *dials
+    ),
+    ranker=_pq_ranker,
+    guard=_pq_reject_updates,
+    write=_pq_write,
+)
+
+
+def read_index_params(spark, path: str) -> IndexParams:
+    """Read a persisted index's frozen state back from ``path`` — the
+    ONE reader of its ``centroids`` and ``codebooks`` (for a caller
+    without the :class:`IndexParams` the build returned, e.g. a
+    crash-replay restart).  Only a PQ index has ``codebooks``."""
+    cent_rows = _collect_centroids(spark.read.parquet(f"{path}/centroids"))
+    by_sub = (
+        _collect_codebooks(spark.read.parquet(f"{path}/codebooks"))
+        if writers.hadoop_path_exists(spark, f"{path}/codebooks")
+        else None
+    )
+    return IndexParams(cent_rows, by_sub)
+
+
+def _write_centroids(spark, path: str, cent_rows: list) -> None:
+    spark.createDataFrame(
+        cent_rows, "cell_id int, __c array<double>"
+    ).write.mode("overwrite").parquet(f"{path}/centroids")
+
+
+def build_ivf_index(
+    embeddings: DataFrame,
+    path: str,
+    n_cells: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroids: DataFrame | None = None,
+    meta_cols: Sequence[str] = (),
+) -> IndexParams:
+    """Materialize a PERSISTED IVF index: the corpus assigned to its
+    coarse cells and written as parquet PARTITIONED BY ``cell_id``
+    (one directory per inverted list), plus the centroid table.
+
+    This is the build-once/search-many shape a deployment actually
+    runs — :func:`top_k_ann_ivf` re-derives the assignment per query
+    set, which is right for ad-hoc checks and wrong for a serving
+    index.  Partitioning by cell is the load-bearing choice: probing
+    becomes DIRECTORY-level partition pruning, so a search touches
+    ``n_probe/n_cells`` of the stored bytes no matter how large the
+    corpus grows (verified by plan test: `PartitionFilters` on
+    ``cell_id``, not a post-scan filter).
+
+    Layout: ``{path}/cells`` — ``(id, *meta_cols, __v, __n)``
+    partitioned by ``cell_id``; ``{path}/centroids`` —
+    ``(cell_id, __c)``.  ``meta_cols`` (r12) carries filterable
+    metadata (language, label, license…) INTO the cell files so a
+    filtered search (:func:`search_ivf_index_filtered`) pushes its
+    predicate down to the pruned scan — at scale the filter must ride
+    the index, not a join back to the corpus.
+
+    Returns the :class:`IndexParams` just written.
+    """
+    corpus = _vector_corpus(embeddings, id_col, vec_col, meta_cols)
+    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
+    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
+    assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
+        f"{path}/cells"
+    )
+    _write_centroids(embeddings.sparkSession, path, cent_rows)
+    return IndexParams(cent_rows, None)
 
 
 def build_ivfpq_index(
@@ -2546,7 +2227,7 @@ def build_ivfpq_index(
     codebooks: DataFrame | None = None,
     seed: int = 42,
     meta_cols: Sequence[str] = (),
-) -> tuple[list, dict]:
+) -> IndexParams:
     """Materialize a PERSISTED IVF-PQ index (r12, the r11 verdict's
     #3): what a 100-TB serving deployment actually stores.  The raw
     :func:`build_ivf_index` keeps full float vectors in every cell —
@@ -2575,29 +2256,15 @@ def build_ivfpq_index(
     narrow (the filter decision is made before any raw vector is
     fetched).
 
-    Returns ``(cent_rows, by_sub)`` — the frozen parameters just
-    written — so a maintenance loop that builds then merges in ONE
-    run can thread them into :func:`add_to_ivfpq_index` instead of
-    re-reading + re-collecting them per delta batch (r16 opt).
+    Returns the :class:`IndexParams` just written.  Codebooks are
+    written LAST, so their presence marks a complete build (the
+    streaming ingest probes them).
     """
-    from .staging import stage
-
     spark = embeddings.sparkSession
-    vcast = F.col(vec_col).cast("array<double>")
     # staged: consumers are the seed collect, the vectors write, and
     # the residual/encode projection
-    corpus = stage(
-        embeddings.filter(finite_vec(vec_col)).select(
-            F.col(id_col),
-            *[F.col(c) for c in meta_cols],
-            vcast.alias("__v"),
-            norm(vcast).alias("__n"),
-        )
-    )
-    if centroids is not None:
-        cent_rows = _collect_centroids(centroids)
-    else:
-        cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
+    corpus = stage(_vector_corpus(embeddings, id_col, vec_col, meta_cols))
+    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
     resid = stage(
         _residual_frame(
             _assign_cells_literal(corpus, cent_rows, id_col),
@@ -2610,22 +2277,114 @@ def build_ivfpq_index(
         codebooks = train_pq_codebooks(
             resid, m=m, k=k_codes, vec_col="__r", seed=seed
         )
-    by_sub = _collect_codebooks(codebooks)
+    params = IndexParams(cent_rows, _collect_codebooks(codebooks))
     resid.select(
         id_col,
         *meta_cols,
         "__n",
-        _pq_codes_expr("__r", by_sub).alias("__codes"),
+        _pq_codes_expr("__r", params.by_sub).alias("__codes"),
         "cell_id",
     ).write.mode("overwrite").partitionBy("cell_id").parquet(f"{path}/codes")
     corpus.drop(*meta_cols).write.mode("overwrite").parquet(
         f"{path}/vectors"
     )
-    spark.createDataFrame(
-        cent_rows, "cell_id int, __c array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
+    _write_centroids(spark, path, cent_rows)
     codebooks.write.mode("overwrite").parquet(f"{path}/codebooks")
-    return cent_rows, by_sub
+    return params
+
+
+def _merge(
+    codec: _CellCodec,
+    delta: DataFrame,
+    path: str,
+    id_col: str,
+    vec_col: str,
+    params: IndexParams | None,
+) -> None:
+    """The delta merge both ``add_to_*`` share: check the metadata
+    contract, assign + encode the delta once against the frozen
+    parameters, run the codec's guard leg, then rewrite only the
+    touched cell partitions as (stored rows minus the delta ids) ∪
+    delta rows through the codec's write leg."""
+    spark = delta.sparkSession
+    if params is None:
+        params = read_index_params(spark, path)
+    # The stored schema is the contract: an index built with meta_cols
+    # carries them in every cell file, so the delta must supply the
+    # same columns or the merged partitions would silently lose them.
+    stored = spark.read.parquet(f"{path}/{codec.rel}")
+    skip = (id_col, *codec.payload, "cell_id")
+    meta = [c for c in stored.columns if c not in skip]
+    missing = [c for c in meta if c not in delta.columns]
+    if missing:
+        raise ValueError(
+            f"delta is missing index metadata columns {missing}; the "
+            f"stored index at {path!r} carries {meta} in its "
+            f"{codec.rel!r} files"
+        )
+    corpus = _vector_corpus(delta, id_col, vec_col, meta)
+    # Persist the assignment ONCE: the all-centroids dot-product (and
+    # PQ encode) projection is the expensive step, and it feeds the
+    # touched-cells collect, the guard leg and the merged write.
+    # Self-contained persist/unpersist (not localCheckpoint, which
+    # cannot be released and would leak a persistent RDD per streaming
+    # micro-batch).
+    encoded = codec.encode(
+        _assign_cells_literal(corpus, params.cent_rows, id_col), params
+    ).persist()
+    try:
+        new_cells = {
+            r["cell_id"]
+            for r in encoded.select("cell_id").distinct().collect()
+        }
+        touched = sorted(
+            new_cells | codec.guard(stored, encoded, path, id_col)
+        )
+        # Anti-join on the delta ids within the touched cells: re-adding
+        # an id replaces its row, and re-applying the SAME delta (a
+        # streaming foreachBatch replay after failure) rewrites the
+        # touched partitions byte-identically instead of duplicating.
+        keep = [id_col, *meta, *codec.payload, "cell_id"]
+        merged = (
+            stored.filter(F.col("cell_id").isin(touched))
+            .join(
+                F.broadcast(encoded.select(id_col).distinct()),
+                on=id_col,
+                how="left_anti",
+            )
+            .select(*keep)
+            .unionByName(encoded.select(*keep))
+        )
+        codec.write(merged, encoded, touched, path, id_col)
+    finally:
+        # blocking: async removal would leave the block registered into
+        # the caller's next operation (and trip persistent-RDD audits)
+        encoded.unpersist(blocking=True)
+
+
+def add_to_ivf_index(
+    delta: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    params: IndexParams | None = None,
+) -> None:
+    """Incremental index maintenance: assign a DELTA batch of vectors
+    to the index's FROZEN centroids and merge them into the persisted
+    cells — the N+δ ingestion shape (`dedup_against_corpus`'s
+    analogue for retrieval).  Only the cell partitions the delta
+    touches are rewritten (dynamic partition overwrite of
+    existing-cell rows ∪ delta rows for those cells); untouched cell
+    directories are never read or written.  Centroids stay fixed —
+    the standard serving trade (drift is handled by periodic rebuild,
+    not per-batch retraining, which would invalidate every stored
+    assignment).
+
+    UPSERT by id (r12): existing rows whose id the delta carries are
+    replaced — including in the PRIOR cell of a vector that
+    re-assigns — so re-adding an id updates its vector and replaying
+    a delta is idempotent."""
+    _merge(_RAW, delta, path, id_col, vec_col, params)
 
 
 def add_to_ivfpq_index(
@@ -2633,9 +2392,7 @@ def add_to_ivfpq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cent_rows: list | None = None,
-    by_sub: dict | None = None,
-    stored_meta: list[str] | None = None,
+    params: IndexParams | None = None,
 ) -> None:
     """Incremental IVF-PQ index maintenance (the serving lifecycle's
     N+δ shape, mirroring :func:`add_to_ivf_index`): the delta batch is
@@ -2662,163 +2419,8 @@ def add_to_ivfpq_index(
     silently inconsistent index — so overlapping ids are checked
     against their stored vectors (cheap on the bounded batch) and a
     mismatch raises; route real updates through
-    :func:`delete_from_ivf_index` + re-add, or a rebuild.
-
-    ``cent_rows`` / ``by_sub`` / ``stored_meta`` (r16 opt, guide
-    §2.4 / the r15 KS-monitor lesson): the index's FROZEN parameters
-    are batch-independent by contract, so a per-run caller — the
-    streaming ingest's foreachBatch drain — collects them ONCE and
-    threads them through every merge instead of re-reading +
-    re-collecting centroids/codebooks/schema per micro-batch (three
-    driver jobs + three parquet listings per batch deleted; frozen
-    parameters mean the inlined literals are identical either way,
-    so the merged index is byte-identical — pinned in
-    tests/test_ivfpq_index.py).  Default ``None`` keeps the
-    self-contained read-from-``path`` behavior for one-shot callers
-    and crash-replay restarts (whose fresh closure has no state)."""
-    spark = delta.sparkSession
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        overwrite_partitions_dynamic,
-    )
-
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    if by_sub is None:
-        by_sub = _collect_codebooks(spark.read.parquet(f"{path}/codebooks"))
-    vcast = F.col(vec_col).cast("array<double>")
-    # The stored CODE schema is the contract (same rule as the raw
-    # index): an index built with meta_cols carries them in every code
-    # file, so the delta must supply the same columns or the merged
-    # partitions would silently lose them.
-    if stored_meta is None:
-        stored_cols = spark.read.parquet(f"{path}/codes").columns
-        stored_meta = [
-            c
-            for c in stored_cols
-            if c not in (id_col, "__n", "__codes", "cell_id")
-        ]
-    meta = list(stored_meta)
-    missing = [c for c in meta if c not in delta.columns]
-    if missing:
-        raise ValueError(
-            f"delta is missing index metadata columns {missing}; the "
-            f"stored index at {path!r} carries {meta} in its code files"
-        )
-    corpus = delta.filter(finite_vec(vec_col)).select(
-        F.col(id_col),
-        *[F.col(c) for c in meta],
-        vcast.alias("__v"),
-        norm(vcast).alias("__n"),
-    )
-    cents_mat = _sql_matrix([c for _cid, c in cent_rows])
-    # Persist ONCE (self-contained persist/unpersist like
-    # add_to_ivf_index): the assign+encode projection feeds the
-    # touched-cells collect, the merge write, AND the vectors append.
-    encoded = (
-        _assign_cells_literal(corpus, cent_rows, id_col)
-        .withColumn(
-            "__r",
-            F.expr(
-                f"zip_with(__v, element_at({cents_mat}, cell_id + 1), "
-                "(x, y) -> x - y)"
-            ),
-        )
-        .select(
-            F.col(id_col),
-            *meta,
-            "__v",
-            "__n",
-            _pq_codes_expr("__r", by_sub).alias("__codes"),
-            "cell_id",
-        )
-        .persist()
-    )
-    try:
-        touched = [
-            r["cell_id"]
-            for r in encoded.select("cell_id").distinct().collect()
-        ]
-        # TRUE-update guard (r14 / ADVICE): an overlapping id whose
-        # delta vector differs from its STORED vector would half-apply
-        # (new code, stale re-rank vector).  Cost contract (r15 /
-        # ADVICE): the probe below is an id-COLUMN-only scan of the
-        # by-id relation per batch — O(index) rows but the narrowest
-        # possible parquet read, the same scan shape the idempotent
-        # vectors append already pays for its anti-join.  The full
-        # __v comparison (wide array column) runs ONLY when the probe
-        # finds overlapping ids, i.e. on replays and true updates —
-        # the common all-new-ids batch never reads a stored vector.
-        # NOTE a codes-side touched-cells probe would NOT be a sound
-        # short-circuit: a changed vector can assign to a DIFFERENT
-        # coarse cell, so its stored code sits outside the touched
-        # set while the half-apply hazard is live; the by-id relation
-        # is the one place every stored id appears exactly once.
-        overlap = (
-            spark.read.parquet(f"{path}/vectors")
-            .select(id_col)
-            .join(
-                F.broadcast(encoded.select(id_col).distinct()),
-                on=id_col,
-                how="left_semi",
-            )
-            .head(1)
-        )
-        conflicts = (
-            [
-                r[id_col]
-                for r in spark.read.parquet(f"{path}/vectors")
-                .select(id_col, F.col("__v").alias("__stored"))
-                .join(
-                    F.broadcast(encoded.select(id_col, "__v")),
-                    on=id_col,
-                    how="inner",
-                )
-                .filter(F.col("__stored") != F.col("__v"))
-                .select(id_col)
-                .head(5)
-            ]
-            if overlap
-            else []
-        )
-        if conflicts:
-            raise ValueError(
-                "add_to_ivfpq_index got CHANGED vectors for ids already "
-                f"in the index at {path!r} (e.g. {conflicts}); deltas "
-                "must be new ids or byte-identical replays — route true "
-                "updates through delete_from_ivf_index + re-add, or a "
-                "rebuild"
-            )
-        existing = spark.read.parquet(f"{path}/codes").filter(
-            F.col("cell_id").isin(touched)
-        )
-        keep = [id_col, *meta, "__n", "__codes", "cell_id"]
-        # Anti-join on the delta ids (frozen parameters ⇒ a replayed id
-        # re-encodes into the SAME cell, so the touched-cell scan sees
-        # it): replaying a batch rewrites the touched partitions
-        # byte-identically instead of duplicating codes.
-        merged = (
-            existing.join(
-                F.broadcast(encoded.select(id_col).distinct()),
-                on=id_col,
-                how="left_anti",
-            )
-            .select(*keep)
-            .unionByName(encoded.select(*keep))
-        )
-        overwrite_partitions_dynamic(merged, f"{path}/codes", ["cell_id"])
-        # Idempotent append: anti-join against the relation's OWN id
-        # set (column-pruned scan; append-while-read is legal — only
-        # overwrite conflicts), so a replayed batch appends zero rows
-        # no matter where the prior attempt crashed.
-        encoded.select(id_col, "__v", "__n").join(
-            spark.read.parquet(f"{path}/vectors").select(id_col),
-            on=id_col,
-            how="left_anti",
-        ).write.mode("append").parquet(f"{path}/vectors")
-    finally:
-        encoded.unpersist(blocking=True)
+    :func:`delete_from_ivf_index` + re-add, or a rebuild."""
+    _merge(_PQ, delta, path, id_col, vec_col, params)
 
 
 def update_ivfpq_index(
@@ -2854,6 +2456,315 @@ def update_ivfpq_index(
     add_to_ivfpq_index(delta, path, id_col=id_col, vec_col=vec_col)
 
 
+def delete_from_ivf_index(
+    delta_ids: DataFrame, path: str, id_col: str = "vec_id"
+) -> None:
+    """Erasure from a persisted ANN index (r13): remove every stored
+    row whose id appears in ``delta_ids`` — the right-to-be-forgotten
+    shape at the INDEX layer.  Deleting a user from the corpus table
+    is not enough once their vectors are serving traffic; the index
+    must forget them too, without a rebuild.
+
+    Only cells holding a target id are rewritten (narrow id+cell
+    column-pruned scan semi-joined to the bounded id batch — the same
+    probe :func:`add_to_ivf_index` uses for upsert); cells emptied by
+    the delete are removed outright rather than left as stale
+    directories.  Covers both layouts in one call: the raw index's
+    ``cells``, the PQ index's ``codes``, and the PQ by-id ``vectors``
+    re-rank relation (unpartitioned — anti-join rewrite through a
+    lineage cut).  Idempotent: re-deleting absent ids touches
+    nothing."""
+    spark = delta_ids.sparkSession
+    ids = delta_ids.select(id_col).distinct().persist()
+    try:
+        for codec in (_RAW, _PQ):
+            p = f"{path}/{codec.rel}"
+            if not writers.hadoop_path_exists(spark, p):
+                continue
+            try:
+                stored = spark.read.parquet(p)
+            except AnalysisException:
+                # Schema-less root (e.g. a _SUCCESS-only directory
+                # left by an interrupted erasure on a pre-tombstone
+                # layout): nothing is stored, so there is nothing to
+                # forget — treat as already-empty instead of failing
+                # the re-run (r15 / ADVICE).
+                continue
+            prior_cells = _cells_holding(stored, ids, id_col)
+            if not prior_cells:
+                continue
+            existing = stored.filter(
+                F.col("cell_id").isin(sorted(prior_cells))
+            )
+            # Batch-maintenance lineage cut (r14 / ADVICE — the
+            # delete_where/upsert_by_key pattern): a .persist() here
+            # would, on cache loss, RECOMPUTE the survivors from a file
+            # listing the delete_partition_dirs below has already
+            # mutated and die with FileNotFoundException mid-erasure;
+            # localCheckpoint materializes once and never re-lists.
+            survivors = existing.join(
+                F.broadcast(ids), on=id_col, how="left_anti"
+            ).localCheckpoint(eager=True)
+            present = {
+                r["cell_id"]
+                for r in survivors.select("cell_id").distinct().collect()
+            }
+            full_erase = False
+            if not present:
+                # every touched cell is about to empty; probe (BEFORE
+                # any file is deleted) whether the touched set covered
+                # the whole relation — if so the root would hold only
+                # _SUCCESS and the next read would fail to infer schema
+                full_erase = prior_cells >= {
+                    r["cell_id"]
+                    for r in stored.select("cell_id").distinct().collect()
+                }
+            doomed = prior_cells - present
+            if full_erase:
+                # FULL erasure (r14 / ADVICE): leave a schema'd
+                # tombstone — one EMPTY parquet file inside a single
+                # cell directory, so partition discovery still sees a
+                # well-formed layout, reads/searches return zero rows,
+                # and a later upsert's dynamic overwrite of cell_id=0
+                # replaces it transparently (the unpartitioned
+                # `vectors` leg already gets this for free from its
+                # empty-but-schema'd rewrite).  Written BEFORE any
+                # directory delete (r15 / ADVICE): the old order could
+                # crash after delete_partition_dirs with the tombstone
+                # unwritten, leaving a _SUCCESS-only root whose next
+                # read fails schema inference — making the erasure
+                # non-re-runnable through exactly the window the
+                # tombstone was added to close.  The overwrite of
+                # cell_id=0 empties that cell itself, so it leaves the
+                # doomed list.
+                survivors.drop("cell_id").repartition(1).write.mode(
+                    "overwrite"
+                ).parquet(f"{p}/cell_id=0")
+                doomed = doomed - {0}
+            writers.delete_partition_dirs(
+                spark,
+                p,
+                ["cell_id"],
+                [(c,) for c in doomed],
+            )
+            if present:
+                writers.overwrite_partitions_dynamic(survivors, p, ["cell_id"])
+        vp = f"{path}/vectors"
+        if writers.hadoop_path_exists(spark, vp):
+            # unpartitioned by-id relation: anti-join rewrite; the
+            # eager lineage cut is what lets the overwrite target the
+            # path being read (upsert_by_key's trade)
+            kept = (
+                spark.read.parquet(vp)
+                .join(F.broadcast(ids), on=id_col, how="left_anti")
+                .localCheckpoint(eager=True)
+            )
+            kept.write.mode("overwrite").parquet(vp)
+    finally:
+        ids.unpersist(blocking=True)
+
+
+def compact_ivf_index(
+    spark, path: str, files_per_cell: int = 1
+) -> None:
+    """Small-file compaction for a persisted ANN index (r13): every
+    delta merge (:func:`add_to_ivf_index` / :func:`add_to_ivfpq_index`)
+    rewrites its touched cells with the write's task parallelism, so a
+    long-running ingest accretes files per cell directory — and a
+    probe pays per file (task launch + footer read), eroding the very
+    directory-pruning advantage the index exists for.  Rewrites each
+    cell to ``files_per_cell`` files through the same dynamic-overwrite
+    compaction as any partitioned table
+    (``sources.writers.compact_partitions``); search results are
+    IDENTICAL before and after (hash-pinned via the shared IVF twin).
+    Covers both layouts: the raw index's ``cells`` and the PQ index's
+    ``codes`` (the unpartitioned ``vectors`` re-rank relation is
+    append-mostly and left to ordinary table compaction)."""
+    for codec in (_RAW, _PQ):
+        p = f"{path}/{codec.rel}"
+        if writers.hadoop_path_exists(spark, p):
+            writers.compact_partitions(spark, p, ["cell_id"], files_per_cell)
+
+
+def probe_ladder(n_probe: int, n_cells: int) -> list[int]:
+    """The deterministic probe-widening ladder for filtered search:
+    ``n_probe, 2·n_probe, 4·n_probe, …`` capped at ``n_cells`` (the
+    final rung always probes everything, so k is guaranteed whenever
+    the filtered corpus holds k rows).  Part of the result contract —
+    the SQL twin derives each query's effective probe count from the
+    same rungs."""
+    if n_probe < 1:
+        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
+    ladder: list[int] = []
+    p = n_probe
+    while p < n_cells:
+        ladder.append(p)
+        p *= 2
+    ladder.append(n_cells)
+    return ladder
+
+
+def _search(
+    codec: _CellCodec,
+    spark,
+    path: str,
+    queries: DataFrame,
+    params: IndexParams | None,
+    where: str | None,
+    k: int,
+    n_probe: int,
+    rerank: int,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+) -> DataFrame:
+    """The one search body behind all four searchers: a probe ladder
+    over ONE ranked probe frame at the WIDEST rung (*Incremental …
+    Top-K Similarity Search*, EDBT 2020) — rung ``p`` is ``__pr <= p``
+    of each query's descending cell order, and its cells become a
+    literal ``cell_id isin`` list (the directory pruning).
+
+    Unfiltered search is the one-rung ladder ``[n_probe]`` with
+    nothing to count: its cell list is one bounded aggregate (≤
+    n_cells distinct ids), and every query with probe rows is ranked,
+    NULL ids included.  Filtered search climbs :func:`probe_ladder`:
+    one bounded collect of (query, cell, rank) rows (|Q|·n_cells)
+    gives each rung the cells its pending queries probe; every rung
+    but the last stages the cell×probe join, counts each pending
+    query's filtered candidates (a ≤|Q|-row collect) and ranks those
+    that reached ``k``; the final rung ranks all still pending,
+    unstaged and uncounted.  A NULL query id cannot be tracked across
+    rungs, so filtered search drops it on every ladder.  Queries with
+    non-finite vectors have no probe rows and never produce output."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if params is None:
+        params = read_index_params(spark, path)
+    ladder = (
+        [n_probe]
+        if where is None
+        else probe_ladder(n_probe, len(params.cent_rows))
+    )
+    stored = spark.read.parquet(f"{path}/{codec.rel}")
+    if where is not None:
+        stored = stored.filter(F.expr(where))
+    rank = codec.ranker(spark, path, k, rerank, id_col, query_id_col)
+    probes_all = codec.probes(
+        queries, params, ladder[-1], query_id_col, query_vec_col, "__pr"
+    )
+
+    def candidates(cells: list, probes: DataFrame) -> DataFrame:
+        return stored.filter(F.col("cell_id").isin(cells)).join(
+            F.broadcast(probes.drop("__pr")), on="cell_id"
+        )
+
+    if where is None:
+        cells = probes_all.agg(
+            F.array_sort(F.collect_set("cell_id"))
+        ).first()[0]
+        return rank(candidates(cells, probes_all))
+    probes_all = probes_all.filter(F.col(query_id_col).isNotNull())
+    probe_rows = probes_all.select(query_id_col, "cell_id", "__pr").collect()
+    pending = {r[query_id_col] for r in probe_rows}
+    todo = probes_all
+    parts: list[DataFrame] = []
+    for p in ladder:
+        cells = sorted(
+            {
+                r["cell_id"]
+                for r in probe_rows
+                if r[query_id_col] in pending and r["__pr"] <= p
+            }
+        )
+        cand = candidates(cells, todo.filter(F.col("__pr") <= p))
+        if p == ladder[-1] or not pending:
+            parts.append(rank(cand))
+            break
+        cand = stage(cand)
+        counts = {
+            r[query_id_col]: r["__nc"]
+            for r in cand.groupBy(query_id_col)
+            .agg(F.count(F.lit(1)).alias("__nc"))
+            .collect()
+        }
+        done = {q for q in pending if counts.get(q, 0) >= k}
+        if done:
+            parts.append(rank(cand.filter(F.col(query_id_col).isin(*done))))
+        pending -= done
+        if not pending:
+            break
+        todo = probes_all.filter(F.col(query_id_col).isin(*pending))
+    return reduce(DataFrame.unionByName, parts)
+
+
+def search_ivf_index(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int = 5,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    params: IndexParams | None = None,
+) -> DataFrame:
+    """Top-k search over a :func:`build_ivf_index` index WITHOUT
+    touching the raw corpus: per-query probe cells are chosen
+    map-side against the (bounded, collected) centroid table, the
+    distinct probed cells become a LITERAL ``isin`` filter on the
+    partition column — static partition pruning, only those cell
+    directories are read — and scoring/ranking proceeds exactly as
+    :func:`top_k_ann_ivf`.  With the same centroids and dials the
+    results are identical to the non-persisted operator (and to its
+    SQL oracle twin)."""
+    return _search(
+        _RAW, spark, path, queries, params, None, k, n_probe, 0,
+        id_col, query_id_col, query_vec_col,
+    )
+
+
+def search_ivf_index_filtered(
+    spark,
+    path: str,
+    queries: DataFrame,
+    where: str,
+    k: int = 5,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    query_id_col: str = "query_id",
+    query_vec_col: str = "query_vec",
+    params: IndexParams | None = None,
+) -> DataFrame:
+    """FILTERED top-k over a persisted IVF index — the
+    metadata-predicate × ANN composition every vector store serves
+    ("nearest docs WHERE lang='en'"), on the pruned index instead of
+    the full corpus (``vec_filtered_topk`` is the exact-bruteforce
+    form; at 100 TB the filter must ride the index).
+
+    Semantics (PRE-filter, k-guaranteed): per query, the effective
+    probe count is the FIRST rung of :func:`probe_ladder` whose top-p
+    cells contain ≥ k corpus vectors satisfying ``where`` (else the
+    final probe-everything rung), and the result is the exact cosine
+    top-k over the filtered vectors in those cells.  This is the
+    recall contract vector stores document for filtered search: a
+    selective predicate can starve the probed cells, so the search
+    widens deterministically rather than returning < k rows.
+
+    Scale shape: BOTH predicates reach the scan — ``cell_id isin``
+    as PartitionFilters (directory pruning) and ``where`` as a pushed
+    data filter (pinned in tests/test_plans.py) — so rung t reads
+    ``min(2^t·n_probe, n_cells)/n_cells`` of the index bytes and only
+    STARVED queries escalate (the per-rung candidate count is a
+    bounded ≤|Q|-row collect off the staged rung relation; |Q| is the
+    probe-batch dial, the codebook class of driver-side state).  The
+    widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
+    """
+    return _search(
+        _RAW, spark, path, queries, params, where, k, n_probe, 0,
+        id_col, query_id_col, query_vec_col,
+    )
+
+
 def search_ivfpq_index(
     spark,
     path: str,
@@ -2864,8 +2775,7 @@ def search_ivfpq_index(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    cent_rows: list | None = None,
-    by_sub: dict | None = None,
+    params: IndexParams | None = None,
 ) -> DataFrame:
     """Top-k search over a :func:`build_ivfpq_index` index: probe
     cells chosen map-side against the bounded centroid table, the
@@ -2877,32 +2787,10 @@ def search_ivfpq_index(
     id fetch against ``{path}/vectors``.  With the same dials and
     seeds the results are IDENTICAL to :func:`top_k_ann_ivfpq`
     (pinned in tests/test_ivfpq_index.py) — the persistence
-    round-trip is lossless.
-
-    ``cent_rows`` / ``by_sub`` (r16 opt, guide §2.4): build-then-
-    search callers pass the frozen parameters they already hold,
-    skipping two bounded driver collects; doubles round-trip parquet
-    exactly, so the results are byte-identical to re-reading."""
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    if by_sub is None:
-        by_sub = _collect_codebooks(spark.read.parquet(f"{path}/codebooks"))
-    probes = _adc_probes(
-        queries, cent_rows, by_sub, n_probe, query_id_col, query_vec_col
-    )
-    # Bounded collect (≤ |Q|·n_probe ints): the literal cell list is
-    # what turns the probe into directory pruning.
-    cells = sorted(
-        r["cell_id"] for r in probes.select("cell_id").distinct().collect()
-    )
-    encoded = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cell_id").isin(cells)
-    )
-    vectors = spark.read.parquet(f"{path}/vectors")
-    return _adc_rank(
-        encoded, vectors, probes, k, rerank, id_col, query_id_col
+    round-trip is lossless."""
+    return _search(
+        _PQ, spark, path, queries, params, None, k, n_probe, rerank,
+        id_col, query_id_col, query_vec_col,
     )
 
 
@@ -2917,8 +2805,7 @@ def search_ivfpq_index_filtered(
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    cent_rows: list | None = None,
-    by_sub: dict | None = None,
+    params: IndexParams | None = None,
 ) -> DataFrame:
     """FILTERED top-k over the persisted IVF-PQ index (r14, the
     r12/r13 verdict queues' carried item): the production serving
@@ -2946,94 +2833,7 @@ def search_ivfpq_index_filtered(
     still-starved queries only.  The per-rung candidate count is a
     bounded ≤|Q|-row collect off the staged code×probe join (shared
     with the ranking — the join is staged once per rung)."""
-    from .staging import stage
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if cent_rows is None:
-        cent_rows = _collect_centroids(
-            spark.read.parquet(f"{path}/centroids")
-        )
-    if by_sub is None:
-        by_sub = _collect_codebooks(spark.read.parquet(f"{path}/codebooks"))
-    ladder = probe_ladder(n_probe, len(cent_rows))
-    vectors = spark.read.parquet(f"{path}/vectors")
-    # ONE ranked ADC probe frame at the WIDEST rung (r16 opt — see
-    # search_ivf_index_filtered): rung p = ``__pr <= p``, so the
-    # per-rung probe/LUT expression build and the per-rung cells
-    # collect collapse into one bounded job (|Q|·n_cells rows).
-    # Non-finite-vector queries have no probe rows in either shape.
-    probes_all = _adc_probes(
-        queries,
-        cent_rows,
-        by_sub,
-        ladder[-1],
-        query_id_col,
-        query_vec_col,
-        rank_col="__pr",
+    return _search(
+        _PQ, spark, path, queries, params, where, k, n_probe, rerank,
+        id_col, query_id_col, query_vec_col,
     )
-    probe_rows = probes_all.select(
-        query_id_col, "cell_id", "__pr"
-    ).collect()
-    pending = {r[query_id_col] for r in probe_rows}
-    parts: list[DataFrame] = []
-    for p in ladder:
-        if not pending:
-            break
-        probes = probes_all.filter(
-            F.col(query_id_col).isin(*pending) & (F.col("__pr") <= p)
-        ).drop("__pr")
-        cells = sorted(
-            {
-                r["cell_id"]
-                for r in probe_rows
-                if r[query_id_col] in pending and r["__pr"] <= p
-            }
-        )
-        encoded = (
-            spark.read.parquet(f"{path}/codes")
-            .filter(F.col("cell_id").isin(cells))
-            .filter(F.expr(where))
-        )
-        # staged once: feeds BOTH the starvation count and the ranking
-        cand = stage(encoded.join(F.broadcast(probes), on="cell_id"))
-        counts = {
-            r[query_id_col]: r["__nc"]
-            for r in cand.groupBy(query_id_col)
-            .agg(F.count(F.lit(1)).alias("__nc"))
-            .collect()
-        }
-        done = (
-            set(pending)
-            if p == ladder[-1]
-            else {q for q in pending if counts.get(q, 0) >= k}
-        )
-        if done:
-            parts.append(
-                _adc_rank_joined(
-                    cand.filter(F.col(query_id_col).isin(*done)),
-                    vectors,
-                    k,
-                    rerank,
-                    id_col,
-                    query_id_col,
-                )
-            )
-        pending -= done
-    if not parts:
-        # no queries survived the id collect (empty/NULL-id batch):
-        # empty frame with the ranked-output contract types
-        probes = _adc_probes(
-            queries, cent_rows, by_sub, ladder[0], query_id_col,
-            query_vec_col,
-        )
-        empty = spark.read.parquet(f"{path}/codes").filter(
-            F.lit(False)
-        ).join(F.broadcast(probes), on="cell_id")
-        return _adc_rank_joined(
-            empty, vectors, k, rerank, id_col, query_id_col
-        )
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out

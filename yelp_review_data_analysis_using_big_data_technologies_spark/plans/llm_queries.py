@@ -1564,14 +1564,13 @@ def retrieval_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivf_serve", sf_dir)
-    cent = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
+    params = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
     q = emb.filter(F.col("vec_id") == _HYBRID_QVEC_ID).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
     vec = lvec.search_ivf_index(
-        spark, path, q, k=_HYBRID_LIST_K, n_probe=_IVF_PROBE,
-        cent_rows=cent,
+        spark, path, q, k=_HYBRID_LIST_K, n_probe=_IVF_PROBE, params=params
     ).select(F.col("vec_id").alias("doc_id"), "rk")
     # one shared tokenize pass across the lexical leg and the whole
     # PRF round (r15 opt — previously 4 independent corpus tokenizes)
@@ -1633,11 +1632,10 @@ def vec_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns exactly what the in-memory operator does."""
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivf_index", sf_dir)
-    # r16 opt: thread the frozen centroids the build just returned
-    cent = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
+    params = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
     return lvec.search_ivf_index(
         spark, path, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
-        cent_rows=cent,
+        params=params,
     ).orderBy("query_id", "rk")
 
 
@@ -1656,27 +1654,21 @@ def vec_ivf_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivf_compact", sf_dir)
     # the bootstrap build statically overwrites the cells dir, so the
-    # entry is idempotent across bench repeats
-    # r16 opt: centroids are FROZEN across merge+compact, so the
-    # build's returned rows thread through both merges and the search
-    # (this build writes no metadata columns — stored_meta=[])
-    cent = lvec.build_ivf_index(
+    # entry is idempotent across bench repeats; its frozen params
+    # thread through both merges and the search
+    params = lvec.build_ivf_index(
         emb.where(F.col("vec_id") < 100), path, n_cells=_IVF_CELLS
     )
     lvec.add_to_ivf_index(
         emb.where((F.col("vec_id") >= 100) & (F.col("vec_id") < 300)),
         path,
-        cent_rows=cent,
-        stored_meta=[],
+        params=params,
     )
-    lvec.add_to_ivf_index(
-        emb.where(F.col("vec_id") >= 300), path, cent_rows=cent,
-        stored_meta=[],
-    )
+    lvec.add_to_ivf_index(emb.where(F.col("vec_id") >= 300), path, params=params)
     lvec.compact_ivf_index(spark, path)
     return lvec.search_ivf_index(
         spark, path, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
-        cent_rows=cent,
+        params=params,
     ).orderBy("query_id", "rk")
 
 
@@ -1700,17 +1692,16 @@ def vec_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clone ids are all LARGER than every real id, so the 8 id-ordered
     # seed centroids equal the clean build's; the bootstrap build
     # statically overwrites the cells dir (idempotent across repeats)
-    cent = lvec.build_ivf_index(
+    params = lvec.build_ivf_index(
         emb.select("vec_id", "embedding").unionByName(clones),
         path,
         n_cells=_IVF_CELLS,
     )
     lvec.delete_from_ivf_index(clones.select("vec_id"), path)
-    # r16 opt: erasure never touches the centroid relation — the
-    # build's returned rows thread into the search
+    # erasure never touches the frozen params
     return lvec.search_ivf_index(
         spark, path, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
-        cent_rows=cent,
+        params=params,
     ).orderBy("query_id", "rk")
 
 
@@ -1741,7 +1732,7 @@ def vec_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     index bytes per query)."""
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivf_filtered", sf_dir)
-    cent = lvec.build_ivf_index(
+    params = lvec.build_ivf_index(
         emb, path, n_cells=_IVF_CELLS, meta_cols=["label"]
     )
     return lvec.search_ivf_index_filtered(
@@ -1751,7 +1742,7 @@ def vec_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         where=_FILTERED_ANN_PRED,
         k=_TOP_K,
         n_probe=_IVF_PROBE,
-        cent_rows=cent,
+        params=params,
     ).orderBy("query_id", "rk")
 
 
@@ -1772,7 +1763,7 @@ def vec_filtered_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exhaustive-dial collapse to filtered bruteforce is unit-pinned."""
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivfpq_filtered", sf_dir)
-    cent, codes = lvec.build_ivfpq_index(
+    params = lvec.build_ivfpq_index(
         emb, path, n_cells=_IVF_CELLS, meta_cols=["label"]
     )
     return lvec.search_ivfpq_index_filtered(
@@ -1783,8 +1774,7 @@ def vec_filtered_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_TOP_K,
         n_probe=_IVF_PROBE,
         rerank=4,
-        cent_rows=cent,
-        by_sub=codes,
+        params=params,
     ).orderBy("query_id", "rk")
 
 
@@ -2026,10 +2016,7 @@ def vec_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry); recall@5 vs bruteforce floor is unit-pinned."""
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivfpq_index", sf_dir)
-    # r16 opt (guide §2.4): the build returns the frozen parameters
-    # it just wrote; threading them into the search skips two bounded
-    # re-collect jobs (doubles round-trip parquet exactly — identical)
-    cent, codes = lvec.build_ivfpq_index(emb, path, n_cells=_IVF_CELLS)
+    params = lvec.build_ivfpq_index(emb, path, n_cells=_IVF_CELLS)
     return lvec.search_ivfpq_index(
         spark,
         path,
@@ -2037,8 +2024,7 @@ def vec_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_TOP_K,
         n_probe=_IVF_PROBE,
         rerank=4,
-        cent_rows=cent,
-        by_sub=codes,
+        params=params,
     ).orderBy("query_id", "rk")
 
 

@@ -46,6 +46,15 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.text import
     minhash_signature_from,
     shingled,
 )
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import (
+    IndexParams,
+    add_to_ivf_index,
+    add_to_ivfpq_index,
+    build_ivf_index,
+    build_ivfpq_index,
+    read_index_params,
+)
+from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import hadoop_path_exists
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import _is_missing_table
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
 
@@ -642,6 +651,53 @@ FROM base b LEFT JOIN reassembled r ON b.doc_id = r.doc_id
 """
 
 
+def _index_ingest(
+    stream: DataFrame,
+    index_path: str,
+    checkpoint: str,
+    last_artifact: str,
+    build,
+    merge,
+    id_col: str,
+    vec_col: str,
+    **dials,
+) -> IndexParams | None:
+    """The drain both index ingests share: the first non-empty
+    micro-batch ``build``s the index (with ``dials``), every later one
+    ``merge``s into it with the frozen :class:`llm.vectors.IndexParams`.
+    Returns those params, or ``None`` when the drain saw no batch.
+
+    "Built" means ``last_artifact`` — the LAST relation the builder
+    writes — exists, probed through the Hadoop FS API (an
+    ``os.path`` check reads False forever on hdfs/s3a and would
+    rebuild every batch, discarding all merges).  A build that
+    crashed halfway therefore replays through the overwrite-mode
+    rebuild instead of a merge that dies reading the missing
+    relation.  The params are cached for this drain only: a
+    crash-replay restart reads them once from disk
+    (:func:`llm.vectors.read_index_params`)."""
+    frozen: dict = {}
+
+    def _admit(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        spark = batch_df.sparkSession
+        if not hadoop_path_exists(spark, f"{index_path}/{last_artifact}"):
+            frozen["params"] = build(
+                batch_df, index_path, id_col=id_col, vec_col=vec_col, **dials
+            )
+            return
+        if "params" not in frozen:
+            frozen["params"] = read_index_params(spark, index_path)
+        merge(
+            batch_df, index_path, id_col=id_col, vec_col=vec_col,
+            params=frozen["params"],
+        )
+
+    drain(stream, checkpoint, _admit)
+    return frozen.get("params")
+
+
 def stream_ann_index_ingest(
     stream: DataFrame,
     index_path: str,
@@ -649,7 +705,7 @@ def stream_ann_index_ingest(
     n_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> list | None:
+) -> IndexParams | None:
     """Drain an embedding ``stream`` (``availableNow``) into the
     PERSISTED IVF index at ``index_path`` (r12): the first non-empty
     micro-batch builds the index — FREEZING the seed coarse quantizer
@@ -670,72 +726,15 @@ def stream_ann_index_ingest(
     full-corpus build's, so a post-ingest :func:`llm.vectors
     .search_ivf_index` is hash-checkable against the SAME static IVF
     twin as ``vec_ivf_index_search`` — the hash proves build, three
-    merges, partition pruning, and search in one pass."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import (
-        _collect_centroids,
-        add_to_ivf_index,
-        build_ivf_index,
+    merges, partition pruning, and search in one pass.
+
+    Returns the index's :class:`llm.vectors.IndexParams` (``None``
+    when the drain saw no batch).  The raw builder writes
+    ``centroids`` last, so their presence means "built"."""
+    return _index_ingest(
+        stream, index_path, checkpoint, "centroids", build_ivf_index,
+        add_to_ivf_index, id_col, vec_col, n_cells=n_cells,
     )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        hadoop_path_exists,
-    )
-
-    # Per-RUN cache of the frozen, batch-independent merge state (r16
-    # opt — the KS-monitor lesson, guide §2.4): the centroids are
-    # frozen at build time and the streaming drain builds with
-    # meta_cols=(), so every merge in this run shares one collected
-    # copy instead of re-reading + re-collecting per micro-batch.
-    # Closure state only — it lives exactly as long as this drain; a
-    # crash-replay restart gets a fresh empty dict and falls back to
-    # the read-from-path default inside add_to_ivf_index's params.
-    frozen: dict = {}
-
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # Hadoop FS probe, not os.path.exists: the index path is a
-        # Hadoop path (hdfs://, s3a://, file:) — a local-only check
-        # would read False forever on a remote store and silently
-        # REBUILD the index every batch, discarding all prior merges.
-        if not hadoop_path_exists(spark, f"{index_path}/centroids"):
-            frozen["cent"] = build_ivf_index(
-                batch_df,
-                index_path,
-                n_cells=n_cells,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-            # built by THIS drain with meta_cols=() — schema known
-            frozen["meta"] = []
-        else:
-            if "cent" not in frozen:
-                # replay/restart path: first batch of this run is a
-                # merge — collect the frozen state once from disk
-                # (a pre-existing index may carry metadata columns,
-                # so the schema is read, not assumed)
-                frozen["cent"] = _collect_centroids(
-                    spark.read.parquet(f"{index_path}/centroids")
-                )
-                stored = spark.read.parquet(f"{index_path}/cells").columns
-                frozen["meta"] = [
-                    c
-                    for c in stored
-                    if c not in (id_col, "__v", "__n", "cell_id")
-                ]
-            add_to_ivf_index(
-                batch_df,
-                index_path,
-                id_col=id_col,
-                vec_col=vec_col,
-                cent_rows=frozen["cent"],
-                stored_meta=frozen["meta"],
-            )
-
-    drain(stream, checkpoint, _admit)
-    # the frozen centroids (or None when the drain saw no batches) —
-    # a post-drain search threads them instead of re-collecting
-    return frozen.get("cent")
 
 
 def stream_pq_index_ingest(
@@ -747,7 +746,7 @@ def stream_pq_index_ingest(
     k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> tuple[list | None, dict | None]:
+) -> IndexParams | None:
     """Drain an embedding ``stream`` (``availableNow``) into the
     persisted IVF-PQ index at ``index_path`` (r14, the r12 verdict's
     #7 carried through r13): the COMPRESSED twin of
@@ -769,81 +768,15 @@ def stream_pq_index_ingest(
     :func:`llm.vectors.build_ivfpq_index` over the full corpus with
     the same centroids/codebooks (pinned in
     tests/test_ivfpq_index.py) — the serving contract: per-batch cost
-    ∝ delta, retraining deferred to explicit rebuilds."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import (
-        _collect_centroids,
-        _collect_codebooks,
-        add_to_ivfpq_index,
-        build_ivfpq_index,
+    ∝ delta, retraining deferred to explicit rebuilds.
+
+    Returns the index's :class:`llm.vectors.IndexParams` (``None``
+    when the drain saw no batch).  The PQ builder writes codes →
+    vectors → centroids → codebooks, so ``codebooks`` — not
+    centroids, which a crash mid-build can leave behind alone —
+    mean "built"."""
+    return _index_ingest(
+        stream, index_path, checkpoint, "codebooks", build_ivfpq_index,
+        add_to_ivfpq_index, id_col, vec_col, n_cells=n_cells, m=m,
+        k_codes=k_codes,
     )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
-        hadoop_path_exists,
-    )
-
-    # Per-RUN cache of the frozen merge state (r16 opt — the
-    # KS-monitor lesson, guide §2.4): centroids AND PQ codebooks are
-    # frozen at build time, so every merge in this run shares one
-    # collected copy — two driver collect jobs + a schema listing per
-    # micro-batch deleted.  Closure-scoped (lives only for this
-    # drain); a crash-replay restart starts empty and re-collects
-    # once from disk.
-    frozen: dict = {}
-
-    def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        # Hadoop FS probe, not os.path (hdfs/s3a-correct — the r13
-        # ADVICE #4 contract): a local-only check would read False
-        # forever on a remote store and rebuild every batch.  Probe
-        # the LAST-written build artifact (r15 / ADVICE):
-        # build_ivfpq_index writes codes → vectors → centroids →
-        # codebooks, so a crash mid-build can leave centroids present
-        # without codebooks — probing centroids would then route every
-        # replay to the merge path, which dies reading codebooks and
-        # never converges.  Probing codebooks means an interrupted
-        # build replays through the overwrite-mode rebuild instead
-        # (the raw twin above already probes ITS last artifact,
-        # centroids).
-        if not hadoop_path_exists(spark, f"{index_path}/codebooks"):
-            frozen["cent"], frozen["codes"] = build_ivfpq_index(
-                batch_df,
-                index_path,
-                n_cells=n_cells,
-                m=m,
-                k_codes=k_codes,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-            # built by THIS drain with meta_cols=() — schema known
-            frozen["meta"] = []
-        else:
-            if "cent" not in frozen:
-                # replay/restart path: first batch of this run is a
-                # merge — collect the frozen state once from disk
-                frozen["cent"] = _collect_centroids(
-                    spark.read.parquet(f"{index_path}/centroids")
-                )
-                frozen["codes"] = _collect_codebooks(
-                    spark.read.parquet(f"{index_path}/codebooks")
-                )
-                stored = spark.read.parquet(f"{index_path}/codes").columns
-                frozen["meta"] = [
-                    c
-                    for c in stored
-                    if c not in (id_col, "__n", "__codes", "cell_id")
-                ]
-            add_to_ivfpq_index(
-                batch_df,
-                index_path,
-                id_col=id_col,
-                vec_col=vec_col,
-                cent_rows=frozen["cent"],
-                by_sub=frozen["codes"],
-                stored_meta=frozen["meta"],
-            )
-
-    drain(stream, checkpoint, _admit)
-    # the frozen parameters (or Nones when the drain saw no batches)
-    # — a post-drain search threads them instead of re-collecting
-    return frozen.get("cent"), frozen.get("codes")

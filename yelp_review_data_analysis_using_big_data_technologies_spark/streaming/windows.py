@@ -312,7 +312,13 @@ def sessionize_sql(gap_s: int = 1800, table: str = "events") -> str:
     (seconds) — same break rule (strictly-greater gap starts a new
     session) as the Spark gaps-and-islands build.  NULL-ts rows are
     excluded (Spark ``session_window`` drops them; a NULL user_id
-    still forms its own session partition in both engines)."""
+    still forms its own session partition in both engines).
+
+    Rows with the same ``ts`` are peers: ``lag`` gives one of them
+    the break and the rest a zero gap, in whatever order DuckDB picks.
+    The running ``sum`` therefore uses the default RANGE frame, which
+    adds a whole peer group at once, so tied events always share one
+    session (as they do in ``session_window``)."""
     return f"""
 WITH o AS (
   SELECT user_id, ts, value,
@@ -322,8 +328,7 @@ WITH o AS (
   FROM {table} WHERE ts IS NOT NULL
   WINDOW w AS (PARTITION BY user_id ORDER BY ts)
 ), s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                           ROWS UNBOUNDED PRECEDING) AS sid
+  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS sid
   FROM o
 )
 SELECT user_id, min(ts) AS session_start, max(ts) AS last_ts,
