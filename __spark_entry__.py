@@ -1541,106 +1541,84 @@ def _q_stream_doc_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 × drift family — streaming PSI monitor
-    (streaming/monitor.py::stream_psi_monitor): the second half-month
-    of events arrives as three micro-batches (event_id % 3 waves —
-    NULL ids/timestamps belong to no wave) and each batch's value
-    distribution is scored against the STATIC first-half reference
-    with frozen reference-quantile edges; per-batch profiles land via
-    dynamic overwrite of their own partition (replay-safe).  Batches
-    are independent given the frozen reference, so the oracle is the
-    batch PSI twin per wave, batch-tagged and unioned."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_psi_monitor
-
+def _stream_monitor(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    monitor,
+    value_col: str,
+    out_cols: list[str],
+    order: list[str],
+) -> DataFrame:
+    """The streaming drift-monitor entry shape: the second half-month
+    of events arrives as three micro-batches (event_id % 3 waves,
+    staged under the scratch dir ``name`` — NULL ids/timestamps belong
+    to no wave), ``monitor`` scores each batch's ``value_col`` against
+    the STATIC first-half reference and lands its profile by dynamic
+    overwrite of its own partition (replay-safe).  Batches are
+    independent given the frozen reference, so each oracle is the
+    batch twin per wave, batch-tagged and unioned.  Returns
+    ``ingest_batch`` + ``out_cols`` sorted by ``order``."""
     ref, cur = _drift_sides(spark, sf_dir)
-    cols = ["event_id", "ts", "value"]
+    cols = ["event_id", "ts", value_col]
     base, stream = _wave_stream(
-        spark, "psi_monitor", sf_dir,
+        spark, name, sf_dir,
         [cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)],
     )
     out = os.path.join(base, "profiles")
-    stream_psi_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
+    monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(out)
         .select(
-            F.col("ingest_batch").cast("int").alias("ingest_batch"),
-            "bucket",
-            "lo",
-            "hi",
-            "ref_n",
-            "cur_n",
-            "ref_share",
-            "cur_share",
-            "psi_term",
-            "psi_total",
+            F.col("ingest_batch").cast("int").alias("ingest_batch"), *out_cols
         )
-        .orderBy("ingest_batch", "bucket")
+        .orderBy(*order)
+    )
+
+
+def _q_stream_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """§2.10 × drift family — streaming PSI monitor
+    (streaming/monitor.py::stream_psi_monitor): each wave's value
+    distribution against the reference with frozen reference-quantile
+    edges; the oracle is the batch PSI twin."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_psi_monitor
+
+    return _stream_monitor(
+        spark, sf_dir, "psi_monitor", stream_psi_monitor, "value",
+        ["bucket", "lo", "hi", "ref_n", "cur_n", "ref_share", "cur_share",
+         "psi_term", "psi_total"],
+        ["ingest_batch", "bucket"],
     )
 
 
 def _q_stream_ks_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 × drift family — streaming KS monitor
-    (streaming/monitor.py::stream_ks_monitor): the same three
-    event_id%3 micro-batch waves as the PSI monitor, each scored
-    against the static first-half reference with the EXACT two-sample
-    KS statistic — the distribution-free leg of the streaming drift
-    panel (no binning convention to defend).  One verdict row per
-    batch, replay-safe dynamic partition overwrite; the oracle is the
-    batch KS twin per wave, batch-tagged and unioned."""
+    (streaming/monitor.py::stream_ks_monitor): each wave against the
+    reference with the EXACT two-sample KS statistic — the
+    distribution-free leg of the streaming drift panel (no binning
+    convention to defend), one verdict row per batch; the oracle is
+    the batch KS twin."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_ks_monitor
 
-    ref, cur = _drift_sides(spark, sf_dir)
-    cols = ["event_id", "ts", "value"]
-    base, stream = _wave_stream(
-        spark, "ks_monitor", sf_dir,
-        [cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)],
-    )
-    out = os.path.join(base, "profiles")
-    stream_ks_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
-    return (
-        spark.read.parquet(out)
-        .select(
-            F.col("ingest_batch").cast("int").alias("ingest_batch"),
-            "ks_stat",
-            "ks_at",
-            "n_a",
-            "n_b",
-        )
-        .orderBy("ingest_batch")
+    return _stream_monitor(
+        spark, sf_dir, "ks_monitor", stream_ks_monitor, "value",
+        ["ks_stat", "ks_at", "n_a", "n_b"],
+        ["ingest_batch"],
     )
 
 
 def _q_stream_chi2_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 × drift family — streaming χ² monitor
-    (streaming/monitor.py::stream_chi2_monitor): the same three
-    event_id%3 waves, each batch's event-type MIX scored against the
-    static first-half reference — the categorical leg completing the
-    streaming drift panel (PSI / KS / χ²).  Reference category counts
-    frozen once; per-batch profiles land replay-safe; the oracle is
-    the batch χ² twin per wave, batch-tagged and unioned."""
+    (streaming/monitor.py::stream_chi2_monitor): each wave's
+    event-type MIX against the reference category counts, frozen once
+    — the categorical leg completing the streaming drift panel (PSI /
+    KS / χ²); the oracle is the batch χ² twin."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
 
-    ref, cur = _drift_sides(spark, sf_dir)
-    cols = ["event_id", "ts", "event_type"]
-    base, stream = _wave_stream(
-        spark, "chi2_monitor", sf_dir,
-        [cur.where(F.col("event_id") % 3 == k).select(*cols) for k in range(3)],
-    )
-    out = os.path.join(base, "profiles")
-    stream_chi2_monitor(stream, ref.select(*cols), out, os.path.join(base, "ckpt"))
-    return (
-        spark.read.parquet(out)
-        .select(
-            F.col("ingest_batch").cast("int").alias("ingest_batch"),
-            "category",
-            "ref_n",
-            "cur_n",
-            "contrib",
-            "chi2_total",
-            "dof",
-        )
-        .orderBy("ingest_batch", "category")
+    return _stream_monitor(
+        spark, sf_dir, "chi2_monitor", stream_chi2_monitor, "event_type",
+        ["category", "ref_n", "cur_n", "contrib", "chi2_total", "dof"],
+        ["ingest_batch", "category"],
     )
 
 

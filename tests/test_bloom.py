@@ -18,7 +18,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.bloom
     build_bloom,
     bloom_prune,
     bloom_pruned_join,
-    suggest_bits,
 )
 
 
@@ -100,7 +99,9 @@ def test_fpp_bounded(spark):
     # disjoint keyspaces: every kept row is a false positive
     dim = spark.range(0, 1000).withColumnRenamed("id", "d_k")
     fact = spark.range(10_000, 30_000).withColumnRenamed("id", "f_k")
-    num_bits, num_hashes = suggest_bits(1000, fpp=0.01)
+    # textbook sizing for 1000 keys at 1%: m = 9,585 bits (rounded up
+    # to the power of two 2^14), h = round(m/n · ln 2) = 7
+    num_bits, num_hashes = 1 << 14, 7
     sketch = build_bloom(dim, "d_k", num_bits=num_bits, num_hashes=num_hashes)
     kept = bloom_prune(
         fact, "f_k", sketch, num_bits=num_bits, num_hashes=num_hashes
@@ -141,16 +142,6 @@ def test_outer_join_rejected(dim, fact):
         bloom_pruned_join(
             fact, dim, fact_key="f_k", dim_key="d_k", how="left_outer"
         )
-
-
-def test_sizing_validation():
-    with pytest.raises(ValueError, match="positive"):
-        suggest_bits(0)
-    with pytest.raises(ValueError, match="fpp"):
-        suggest_bits(100, fpp=1.5)
-    nb, nh = suggest_bits(1_000_000, fpp=0.01)
-    assert nb & (nb - 1) == 0 and nb >= 1 << 23
-    assert 1 <= nh <= 16
 
 
 def test_bad_num_bits_rejected(spark, dim):

@@ -20,6 +20,11 @@ import pytest
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources import catalog as cat
 
 
+def _table_names(spark):
+    """Persistent (non-temporary) tables in the current database."""
+    return [t.name for t in spark.catalog.listTables() if not t.isTemporary]
+
+
 @pytest.fixture()
 def pq(spark, tmp_path):
     """Two small parquet datasets with distinct row counts."""
@@ -54,7 +59,7 @@ def test_case_fold_is_one_table_last_registration_wins(spark, pq, clean):
     cat.register_external_table(spark, "colcase", b)
     assert spark.table("ColCase").count() == 5
     assert spark.table("colcase").count() == 5
-    assert cat.table_names(spark).count("colcase") == 1
+    assert _table_names(spark).count("colcase") == 1
 
 
 def test_register_over_temp_view_fails_closed(spark, pq, clean):
@@ -66,7 +71,7 @@ def test_register_over_temp_view_fails_closed(spark, pq, clean):
     with pytest.raises(ValueError, match="temp view"):
         cat.register_external_table(spark, "coltv", a)
     assert spark.table("coltv").count() == 7
-    assert "coltv" not in cat.table_names(spark)
+    assert "coltv" not in _table_names(spark)
 
 
 def test_qualified_register_sees_bare_temp_view_shadow(spark, pq, clean):
@@ -134,7 +139,7 @@ def test_hostile_identifiers_rejected_without_registration(
     a, _ = pq
     with pytest.raises(Exception):
         cat.register_external_table(spark, bad, a)
-    assert bad not in cat.table_names(spark)
+    assert bad not in _table_names(spark)
 
 
 def test_managed_overwrite_over_external_leaves_files(spark, pq, clean):

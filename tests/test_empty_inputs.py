@@ -36,7 +36,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relat
     dedup_keyed_deterministic,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.skew import (
-    salted_aggregate,
     salted_join,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
@@ -121,14 +120,6 @@ def test_salted_join_empty_left(spark, smoke_dir, empty_events):
             empty_events.select("event_id", "event_type"),
             right,
             on="event_type",
-        )
-    )
-
-
-def test_salted_aggregate_empty(empty_events):
-    _expect_empty(
-        salted_aggregate(
-            empty_events, keys=["event_type"], n=("count", "*")
         )
     )
 

@@ -87,186 +87,6 @@ class TestCsvSink:
             write_csv(orders, "")
 
 
-class TestClusteredWrite:
-    def test_files_cover_disjoint_key_ranges(self, spark, orders, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_clustered
-
-        out = tmp_path / "orders_clustered"
-        write_clustered(orders, str(out), cluster_by=["o_orderkey"], n_files=8)
-        import pyarrow.parquet as pq
-
-        spans = []
-        for f in sorted(out.glob("*.parquet")):
-            md = pq.ParquetFile(str(f)).metadata
-            idx = md.schema.names.index("o_orderkey")
-            lo = min(
-                md.row_group(i).column(idx).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(i).column(idx).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            spans.append((lo, hi))
-        assert len(spans) > 1
-        spans.sort()
-        # disjoint ranges = footer min/max stats admit file-level
-        # skipping for any o_orderkey range predicate
-        assert all(a_hi < b_lo for (_, a_hi), (b_lo, _) in zip(spans, spans[1:]))
-
-    def test_roundtrip_preserves_content(self, spark, orders, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_clustered
-
-        out = str(tmp_path / "orders_clustered_rt")
-        write_clustered(orders, out, cluster_by=["o_orderkey"], n_files=4)
-        back = spark.read.parquet(out)
-        assert back.count() == orders.count()
-        assert sorted(back.columns) == sorted(orders.columns)
-
-    def test_requires_cluster_columns(self, orders, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_clustered
-
-        with pytest.raises(ValueError):
-            write_clustered(orders, str(tmp_path / "x"), cluster_by=[])
-
-
-class TestZorderWrite:
-    def test_files_bound_both_dimensions(self, spark, orders, tmp_path):
-        """Z-order must bound EVERY key per file, not just a leading
-        one: with a ~4×4 Morton grid over 16 files, the average
-        per-file fraction of each key's range stays well under the
-        ~1.0 a single-key sort leaves for the second key."""
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_zordered
-
-        out = tmp_path / "orders_z"
-        write_zordered(
-            orders, str(out), zorder_by=["o_orderkey", "o_totalprice"],
-            n_files=16,
-        )
-        import pyarrow.parquet as pq
-
-        fracs = {"o_orderkey": [], "o_totalprice": []}
-        total = {}
-        for col in fracs:
-            r = orders.agg(
-                F.min(col).alias("mn"), F.max(col).alias("mx")
-            ).first()
-            total[col] = float(r.mx) - float(r.mn)
-        files = sorted(out.glob("*.parquet"))
-        assert len(files) > 4
-        for f in files:
-            md = pq.ParquetFile(str(f)).metadata
-            for col in fracs:
-                idx = md.schema.names.index(col)
-                lo = min(
-                    md.row_group(i).column(idx).statistics.min
-                    for i in range(md.num_row_groups)
-                )
-                hi = max(
-                    md.row_group(i).column(idx).statistics.max
-                    for i in range(md.num_row_groups)
-                )
-                fracs[col].append((float(hi) - float(lo)) / total[col])
-        for col, fs in fracs.items():
-            avg = sum(fs) / len(fs)
-            assert avg < 0.6, f"{col}: avg file span {avg:.2f} of range"
-
-    def test_constant_key_degenerates_gracefully(self, spark, orders, tmp_path):
-        """r8 edge: a zorder key with min == max (constant column, the
-        width-0 normalization case) must not divide by zero or skew the
-        code — the layout degrades to a clean single-key sort on the
-        varying key and the roundtrip stays lossless."""
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_zordered
-        from pyspark.sql import functions as SF
-
-        const = orders.withColumn("o_custkey", SF.lit(7).cast("bigint"))
-        out = str(tmp_path / "orders_z_const")
-        write_zordered(
-            const, out, zorder_by=["o_orderkey", "o_custkey"], n_files=4
-        )
-        back = spark.read.parquet(out)
-        assert back.count() == orders.count()
-        assert back.agg(SF.countDistinct("o_custkey")).first()[0] == 1
-
-    def test_roundtrip_and_validation(self, spark, orders, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_zordered
-
-        out = str(tmp_path / "orders_z_rt")
-        write_zordered(
-            orders, out, zorder_by=["o_orderkey", "o_custkey"], n_files=4
-        )
-        back = spark.read.parquet(out)
-        assert back.count() == orders.count()
-        assert "__z" not in back.columns
-        with pytest.raises(ValueError):
-            write_zordered(orders, out, zorder_by=["o_orderkey"])
-        with pytest.raises(ValueError):
-            write_zordered(
-                orders, out, zorder_by=["o_orderkey", "o_custkey"], bits=32
-            )
-
-
-class TestQualityGate:
-    def test_gate_passes_and_returns_metrics(self, spark, orders, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.quality import write_parquet_gated
-
-        out = str(tmp_path / "orders_gated")
-        got = write_parquet_gated(
-            orders,
-            out,
-            metrics={
-                "n_rows": F.count(F.lit(1)),
-                "null_keys": F.sum(
-                    F.col("o_orderkey").isNull().cast("long")
-                ),
-            },
-            expectations={
-                "n_rows": lambda v: v > 0,
-                "null_keys": lambda v: v == 0,
-            },
-        )
-        assert got["n_rows"] == orders.count() and got["null_keys"] == 0
-        assert spark.read.parquet(out).count() == orders.count()
-
-    def test_gate_raises_with_observed_values(self, spark, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.quality import (
-            QualityGateError,
-            write_parquet_gated,
-        )
-
-        bad = spark.createDataFrame(
-            [(1, None), (2, "x")], "id long, name string"
-        )
-        with pytest.raises(QualityGateError) as exc:
-            write_parquet_gated(
-                bad,
-                str(tmp_path / "bad_gated"),
-                metrics={
-                    "null_names": F.sum(F.col("name").isNull().cast("long"))
-                },
-                expectations={"null_names": lambda v: v == 0},
-            )
-        assert exc.value.failures == {"null_names": 1}
-
-    def test_gate_rejects_unobserved_expectation_before_write(
-        self, spark, tmp_path
-    ):
-        """A typo'd expectation name must fail LOUDLY and BEFORE the
-        write (previously a post-write KeyError with no hint)."""
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.quality import write_parquet_gated
-
-        df = spark.createDataFrame([(1,)], "id long")
-        out = tmp_path / "typo_gated"
-        with pytest.raises(ValueError, match="unobserved"):
-            write_parquet_gated(
-                df,
-                str(out),
-                metrics={"n_rows": F.count(F.lit(1))},
-                expectations={"n_row": lambda v: v > 0},  # typo
-            )
-        assert not out.exists()  # validation fired before the write
-
-
 class TestOrcSink:
     def test_partitioned_roundtrip_preserves_content(self, spark, orders, tmp_path):
         from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_orc
@@ -826,28 +646,6 @@ def test_upsert_replaces_null_key_row(spark, tmp_path):
     )
     got = {r.id: r.payload for r in spark.read.parquet(path).collect()}
     assert got == {None: "new", 7: "keep"}
-
-
-def test_zorder_accepts_timestamp_keys_and_rejects_all_null(spark, tmp_path):
-    """Temporal z-order keys normalize through epoch casts; an
-    all-NULL key raises a clear error instead of TypeError."""
-    import pytest as _pytest
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_zordered
-
-    df = spark.createDataFrame(
-        [(i, f"2024-01-0{1 + i % 5} 00:00:00") for i in range(20)],
-        "uid long, ts string",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    path = str(tmp_path / "zts")
-    write_zordered(df, path, ["ts", "uid"], n_files=2)
-    assert spark.read.parquet(path).count() == 20
-
-    bad = spark.createDataFrame(
-        [(1, None), (2, None)], "uid long, ts timestamp"
-    )
-    with _pytest.raises(ValueError, match="no non-NULL"):
-        write_zordered(bad, str(tmp_path / "zbad"), ["ts", "uid"])
 
 
 def test_negative_nanos_truncate_matches_duckdb(spark, tmp_path):

@@ -640,52 +640,6 @@ def test_full_erasure_rerunnable_through_crash_window(
     lvec.delete_from_ivf_index(emb.select("vec_id"), torn)  # no raise
 
 
-def test_update_ivfpq_index_replaces_vectors_and_replays(
-    spark, tmp_path_factory
-):
-    """r15 (the r14 verdict's #7): the sanctioned true-update path —
-    delete + re-add — must (a) actually serve the NEW vectors, (b)
-    keep every id unique across codes and re-rank relations even when
-    the changed vector migrates to a different coarse cell, and (c)
-    converge when replayed after a crash-anywhere."""
-    emb = _emb(spark, n=48)
-    path = str(tmp_path_factory.mktemp("ivfpq_upd") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=8)
-    # the raw add path still rejects the in-place update
-    mutated = emb.where(F.col("vec_id") < 6).select(
-        "vec_id",
-        F.expr("transform(embedding, x -> x + 32.0f)").alias("embedding"),
-    )
-    import pytest
-
-    with pytest.raises(ValueError, match="CHANGED vectors"):
-        lvec.add_to_ivfpq_index(mutated, path)
-    lvec.update_ivfpq_index(mutated, path)
-    codes = spark.read.parquet(f"{path}/codes")
-    vecs = spark.read.parquet(f"{path}/vectors")
-    assert codes.count() == 48 and vecs.count() == 48
-    assert codes.select("vec_id").distinct().count() == 48
-    assert vecs.select("vec_id").distinct().count() == 48
-    # the re-rank relation now stores the mutated vectors
-    stored = {
-        r["vec_id"]: r["__v"]
-        for r in vecs.where(F.col("vec_id") < 6).collect()
-    }
-    expect = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in mutated.collect()
-    }
-    assert stored == expect
-    before = sorted(map(tuple, codes.collect()))
-    # crash-replay of the whole update converges
-    lvec.update_ivfpq_index(mutated, path)
-    assert (
-        sorted(map(tuple, spark.read.parquet(f"{path}/codes").collect()))
-        == before
-    )
-    assert spark.read.parquet(f"{path}/vectors").count() == 48
-
-
 def test_multirerank_equals_independent_calls(spark):
     """r15 opt pin: top_k_ann_ivfpq_multirerank's shared encode + ADC
     + widest-cut exact-re-rank pass must reproduce every independent

@@ -31,7 +31,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import (
     dedup_keyed_deterministic,
 )
-from yelp_review_data_analysis_using_big_data_technologies_spark.operators.skew import salted_aggregate
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
 
 PARTITIONINGS = (1, 3, 17)
@@ -41,8 +40,7 @@ def _canon(df):
     """Order-insensitive canonical form of a result frame.  Floats are
     rounded to 6 places (the oracle gate's tolerance): a distributed
     double SUM is only partition-invariant up to FP associativity —
-    the last ulp legitimately differs with partial-sum order, for the
-    salted and the plain groupBy sum alike."""
+    the last ulp legitimately differs with partial-sum order."""
     cols = sorted(df.columns)
     rows = [
         tuple(
@@ -273,21 +271,6 @@ def test_importance_weights_invariant(docs_by_parts):
 
     _assert_invariant(
         _runs(docs_by_parts, lambda d: importance_weights(d, d.filter("lang = 'en'")))
-    )
-
-
-def test_salted_aggregate_invariant(events_by_parts):
-    _assert_invariant(
-        _runs(
-            events_by_parts,
-            lambda d: salted_aggregate(
-                d,
-                keys=["event_type"],
-                buckets=8,
-                n=("count", "*"),
-                total=("sum", "value"),
-            ),
-        )
     )
 
 

@@ -514,15 +514,6 @@ class TestPackBins:
             off += r.n_tokens
             last_bin = r.bin_id
 
-    def test_fill_stats_conserve_tokens(self, docs):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.llm import packing as lpk
-
-        packed = lpk.pack_bins(docs, budget=16, bucket_size=7)
-        stats = lpk.bin_fill_stats(packed, budget=16).collect()
-        total = sum(r.n_tokens for r in packed.collect())
-        assert sum(r.bin_tokens for r in stats) == total
-        assert all(r.n_docs > 0 for r in stats)
-
 
 class TestMixtureSample:
     @pytest.fixture()

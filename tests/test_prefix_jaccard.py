@@ -134,6 +134,7 @@ def test_profile_predictions_are_exact(spark):
     dispatcher's decisions are only as honest as the predictor."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
         _jaccard_postings,
+        _retained_df,
         ngram_jaccard_candidate_profile,
     )
 
@@ -141,7 +142,7 @@ def test_profile_predictions_are_exact(spark):
     df = _docs(spark, rows)
     t = 0.5
     sh = _jaccard_postings(df, "doc_id", "text", 3)
-    prof = ngram_jaccard_candidate_profile(sh, t, max_df=None)
+    prof = ngram_jaccard_candidate_profile(sh, _retained_df(sh, None), t)
     full_cands = (
         sh.alias("a")
         .join(sh.alias("b"), on="__s")
@@ -188,6 +189,7 @@ def test_auto_picks_prefix_on_shared_heavy_corpus(spark):
     return the (identical) pair set via the prefix plan."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
         _jaccard_postings,
+        _retained_df,
         ngram_jaccard_candidate_profile,
         ngram_jaccard_pairs_auto,
     )
@@ -195,7 +197,7 @@ def test_auto_picks_prefix_on_shared_heavy_corpus(spark):
     rows = _rand_corpus(seed=11, n_docs=60, vocab_size=6, max_len=30)
     df = _docs(spark, rows)
     sh = _jaccard_postings(df, "doc_id", "text", 3)
-    prof = ngram_jaccard_candidate_profile(sh, 0.5, max_df=1000)
+    prof = ngram_jaccard_candidate_profile(sh, _retained_df(sh, 1000), 0.5)
     release_staging()
     assert prof["candidates_full"] > 2 * prof["candidates_prefix"], prof
     want = _pairs(df, ngram_jaccard_pairs, threshold=0.5)
@@ -211,6 +213,7 @@ def test_auto_picks_base_on_rare_shingle_corpus(spark):
     plan."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
         _jaccard_postings,
+        _retained_df,
         ngram_jaccard_candidate_profile,
         ngram_jaccard_pairs_auto,
     )
@@ -218,7 +221,7 @@ def test_auto_picks_base_on_rare_shingle_corpus(spark):
     rows = _rand_corpus(seed=13, n_docs=40, vocab_size=5000, max_len=30)
     df = _docs(spark, rows)
     sh = _jaccard_postings(df, "doc_id", "text", 3)
-    prof = ngram_jaccard_candidate_profile(sh, 0.3, max_df=1000)
+    prof = ngram_jaccard_candidate_profile(sh, _retained_df(sh, 1000), 0.3)
     release_staging()
     assert prof["candidates_full"] <= 2 * prof["candidates_prefix"], prof
     want = _pairs(df, ngram_jaccard_pairs, threshold=0.3)
@@ -237,6 +240,7 @@ def test_auto_mitigates_viral_shingle_under_the_df_cap(spark):
     and the result must equal the base plan's."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
         _jaccard_postings,
+        _retained_df,
         ngram_jaccard_candidate_profile,
         ngram_jaccard_pairs_auto,
     )
@@ -251,7 +255,7 @@ def test_auto_mitigates_viral_shingle_under_the_df_cap(spark):
         rows.append((f"c{j}", rows[j][1] + " tailedit"))
     df = _docs(spark, rows)
     sh = _jaccard_postings(df, "doc_id", "text", 3)
-    prof = ngram_jaccard_candidate_profile(sh, 0.5, max_df=1000)
+    prof = ngram_jaccard_candidate_profile(sh, _retained_df(sh, 1000), 0.5)
     release_staging()
     # the single viral posting list dominates: ~108²/2 candidates
     assert prof["candidates_full"] > 2 * prof["candidates_prefix"], prof
@@ -260,11 +264,49 @@ def test_auto_mitigates_viral_shingle_under_the_df_cap(spark):
     got = _pairs(df, ngram_jaccard_pairs_auto, threshold=0.5)
     assert got == want
     # over the cap the cliff's other side: the viral shingle drops out
-    prof_capped = ngram_jaccard_candidate_profile(
-        _jaccard_postings(df, "doc_id", "text", 3), 0.5, max_df=64
-    )
+    sh = _jaccard_postings(df, "doc_id", "text", 3)
+    prof_capped = ngram_jaccard_candidate_profile(sh, _retained_df(sh, 64), 0.5)
     release_staging()
     assert prof_capped["candidates_full"] < 2000, prof_capped
+
+
+@pytest.mark.parametrize(
+    "vocab_size, threshold, picks_prefix", [(6, 0.5, True), (5000, 0.3, False)]
+)
+def test_auto_equals_direct_at_small_max_df(
+    spark, vocab_size, threshold, picks_prefix
+):
+    """The dispatcher cuts its shared df relation at the ``max_df`` it
+    was given, so at a cut small enough to change the pairs it returns
+    exactly the rows of both direct operators at that ``max_df`` —
+    through either plan — and stages one relation more than the plan
+    it runs (the shared df relation)."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
+        _jaccard_postings,
+        _retained_df,
+        ngram_jaccard_candidate_profile,
+        ngram_jaccard_pairs_auto,
+    )
+
+    df = _docs(spark, _rand_corpus(seed=17, n_docs=40, vocab_size=vocab_size, max_len=30))
+    sh = _jaccard_postings(df, "doc_id", "text", 3)
+    prof = ngram_jaccard_candidate_profile(sh, _retained_df(sh, 3), threshold)
+    release_staging()
+    assert (prof["candidates_full"] > 2 * prof["candidates_prefix"]) == picks_prefix
+
+    def run(fn, **kw):
+        rows = sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in fn(df, threshold=threshold, **kw).collect()
+        )
+        return rows, release_staging()
+
+    base, base_staged = run(ngram_jaccard_pairs, max_df=3)
+    prefix, prefix_staged = run(ngram_jaccard_pairs_prefix, max_df=3)
+    auto, auto_staged = run(ngram_jaccard_pairs_auto, max_df=3)
+    assert base != run(ngram_jaccard_pairs, max_df=None)[0]  # the cut bites
+    assert auto == base == prefix
+    assert auto_staged == (prefix_staged if picks_prefix else base_staged) + 1
 
 
 def test_partition_invariance(spark):

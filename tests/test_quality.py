@@ -94,27 +94,6 @@ class TestRepetitionProfile:
         assert got[2] == (8, 0.5, round(1 - 2 / 6, 6))
         assert got[3] == (2, 0.5, 0.0)
 
-    def test_filter_drops_repetitive(self, spark):
-        df = spark.createDataFrame(
-            [(1, "w " * 50), (2, "fresh words only here now truly")],
-            "doc_id long, text string",
-        )
-        kept = [r.doc_id for r in lq.repetition_filter(df).collect()]
-        assert kept == [2]
-
-    def test_filter_keeps_unscored_docs(self, spark):
-        """NULL/empty-text docs violate no repetition threshold and
-        must survive the filter (previously the pass-list semi-join
-        silently deleted everything the profile could not score)."""
-        df = spark.createDataFrame(
-            [(1, "w " * 50), (2, None), (3, "fresh words only here now truly")],
-            "doc_id long, text string",
-        )
-        kept = sorted(
-            r.doc_id for r in lq.repetition_filter(df).collect()
-        )
-        assert kept == [2, 3]
-
 
 class TestRedactPii:
     def test_masks_and_counts(self, spark):

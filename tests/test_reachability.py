@@ -1,0 +1,92 @@
+"""Reachability guard (a plain AST scan, no Spark): every module-level
+``def`` / ``class`` in the package must be reachable from code that
+is not a test — the entry module, ``bench.py``, ``scripts/``,
+``perfbench/`` or the package's own module-level statements (imports
+and re-exports included) — through a chain of identifier references.
+A function only a test calls is dead weight: delete it with its
+tests, or wire it to an entry.
+
+Reachability is a fixpoint over names: a package definition is live
+once a live context mentions its name as an identifier (``Name``,
+``Attribute`` or an imported alias), and its body then becomes a live
+context itself.  A definition referenced only from other dead
+definitions stays dead, and a mention inside a docstring or comment
+does not count.  Names are matched without scoping, so the guard can
+miss a dead function that shares its name with a live identifier; it
+never flags a reachable one.
+
+``ALLOWED`` names the reference implementations a test compares the
+engine against; each carries the reason it stays."""
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "yelp_review_data_analysis_using_big_data_technologies_spark"
+
+#: ``path::name`` → why a definition no entry reaches is kept.
+ALLOWED = {
+    f"{PKG}/llm/dedup.py::simhash_words": (
+        "brute-force oracle: test_llm.py::test_banded_recall_equals_"
+        "bruteforce checks simhash_near_dup_pairs against all-pairs "
+        "Hamming distance over these hash words"
+    ),
+}
+
+
+def _sources():
+    """Every non-test Python file: the package, the entry module,
+    ``bench.py``, ``scripts/`` and ``perfbench/`` (its tests excluded)."""
+    for top in (PKG, "scripts", "perfbench"):
+        for dirpath, dirs, files in os.walk(os.path.join(ROOT, top)):
+            dirs[:] = sorted(d for d in dirs if d not in ("tests", "__pycache__"))
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    yield os.path.relpath(os.path.join(dirpath, f), ROOT)
+    yield "__spark_entry__.py"
+    yield "bench.py"
+
+
+def _identifiers(node):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            yield n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.attr
+        elif isinstance(n, ast.alias):
+            yield n.name.rsplit(".", 1)[-1]
+
+
+def _unreachable():
+    """Sorted ``path::name`` of every package definition no chain of
+    references from non-test code reaches."""
+    defs, live = {}, set()
+    for path in _sources():
+        with open(os.path.join(ROOT, path)) as f:
+            tree = ast.parse(f.read())
+        for node in tree.body:
+            if path.startswith(PKG + os.sep) and isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                defs[(path, node.name)] = set(_identifiers(node)) - {node.name}
+            else:
+                live.update(_identifiers(node))
+    while True:
+        reached = [k for k in defs if k[1] in live]
+        if not reached:
+            break
+        for k in reached:
+            live.update(defs.pop(k))
+    return sorted(f"{path}::{name}" for path, name in defs)
+
+
+def test_every_package_definition_is_reachable():
+    dead = [d for d in _unreachable() if d not in ALLOWED]
+    assert dead == [], (
+        "package definitions only tests reach (delete them with their "
+        "tests, or wire them to an entry):\n  " + "\n  ".join(dead)
+    )
+
+
+def test_allowlist_holds_only_unreachable_definitions():
+    assert sorted(ALLOWED) == [d for d in _unreachable() if d in ALLOWED]

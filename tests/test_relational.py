@@ -113,53 +113,6 @@ class TestMadUdaf:
         got = df.groupBy("g").agg(median_abs_deviation("v").alias("m")).collect()[0].m
         assert got is None
 
-    def test_mad_native_matches_udaf(self, spark):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.functions.udafs import (
-            mad_native,
-            median_abs_deviation,
-        )
-        from pyspark.sql import functions as F
-
-        df = spark.createDataFrame(
-            [("a", float(v)) for v in (1, 2, 4, 7, 11, 20)]
-            + [("b", float(v)) for v in (3, 3, 9)],
-            "g string, v double",
-        )
-        via_udaf = {
-            r.g: r.m
-            for r in df.groupBy("g")
-            .agg(median_abs_deviation("v").alias("m"))
-            .collect()
-        }
-        via_native = {
-            r.g: r.value_mad for r in mad_native(df, "g", "v").collect()
-        }
-        assert via_udaf == via_native
-
-    def test_mad_native_keeps_null_group(self, spark):
-        """The self-join is null-safe-keyed: a plain equi-join would
-        drop the NULL group that groupBy keeps, silently breaking the
-        'bit-identical to the UDAF' contract."""
-        from yelp_review_data_analysis_using_big_data_technologies_spark.functions.udafs import (
-            mad_native,
-            median_abs_deviation,
-        )
-
-        df = spark.createDataFrame(
-            [("a", 1.0), ("a", 5.0), (None, 2.0), (None, 10.0)],
-            "g string, v double",
-        )
-        via_udaf = {
-            r.g: r.m
-            for r in df.groupBy("g")
-            .agg(median_abs_deviation("v").alias("m"))
-            .collect()
-        }
-        via_native = {
-            r.g: r.value_mad for r in mad_native(df, "g", "v").collect()
-        }
-        assert None in via_native and via_udaf == via_native
-
 
 class TestScd2Intervals:
     def test_intervals_chain_half_open(self, spark):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.skew import (
     replicate_for_salt,
-    salted_aggregate,
     salted_join,
     with_salt,
 )
@@ -48,34 +47,6 @@ class TestSalting:
         plain = skewed.join(dim, on="k").select("k", "v", "name")
         salted = salted_join(skewed, dim, on="k", buckets=4).select("k", "v", "name")
         assert sorted(map(str, plain.collect())) == sorted(map(str, salted.collect()))
-
-    def test_salted_aggregate_equals_plain(self, skewed):
-        plain = {
-            (r.k): (r.n, r.s)
-            for r in skewed.groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("s"))
-            .collect()
-        }
-        salted = {
-            (r.k): (r.n, r.s)
-            for r in salted_aggregate(
-                skewed, ["k"], buckets=4, n=("count", "*"), s=("sum", "v")
-            ).collect()
-        }
-        assert plain == salted
-
-    def test_salted_count_col_excludes_nulls(self, spark):
-        # SQL count(col) semantics: NULLs don't count; "*" counts rows.
-        df = spark.createDataFrame(
-            [(1, None), (1, 5.0), (1, None), (2, 1.0)], "k int, v double"
-        )
-        got = {
-            r.k: (r.rows, r.vals)
-            for r in salted_aggregate(
-                df, ["k"], buckets=4, rows=("count", "*"), vals=("count", "v")
-            ).collect()
-        }
-        assert got == {1: (3, 1), 2: (1, 1)}
 
     def test_salted_join_rejects_right_preserving(self, spark, skewed):
         import pytest as _pytest

@@ -3,13 +3,9 @@ must fold all of a user's events into cumulative totals and agree with
 the equivalent batch aggregation.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.stateful import (
-    running_user_profile,
-    running_user_profile_tws,
-)
+from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.stateful import running_user_profile
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import run_available_now
 
 
@@ -24,38 +20,13 @@ def test_running_profile_matches_batch_totals(spark, smoke_dir):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def test_tws_profile_matches_batch_totals(spark, smoke_dir):
-    """Same batch-equality contract for the transformWithStateInPandas
-    variant (RocksDB state store).  Skips where protobuf (the state
-    serialization dependency) isn't installed — this container."""
-    pytest.importorskip("google.protobuf")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        _run_profile_check(
-            spark, smoke_dir, op=running_user_profile_tws,
-            sink="t_stateful_profile_tws",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-
-
-def _run_profile_check(
-    spark, smoke_dir, op=running_user_profile, sink="t_stateful_profile"
-):
+def _run_profile_check(spark, smoke_dir):
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming import stream_events
 
     stream = stream_events(spark, smoke_dir).select("user_id", "ts", "value")
-    out = run_available_now(op(stream), sink, "update")
+    out = run_available_now(
+        running_user_profile(stream), "t_stateful_profile", "update"
+    )
     # update mode may emit a row per (user, micro-batch): keep the last
     # emission per user (max n_events — counts are monotone)
     got = {}

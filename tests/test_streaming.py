@@ -98,72 +98,6 @@ def test_sliding_doubles_contributions(spark, smoke_dir, batch_events):
     assert sum(n for n, _ in s.values()) == 2 * batch_events.count()
 
 
-def test_dedup_within_watermark_suppresses_replays(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: duplicate keys arriving within
-    the watermark horizon are emitted once."""
-    import datetime as dt
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import dedup_within_watermark
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0)
-    rows = [
-        (1, t0, 1.0),
-        (1, t0 + dt.timedelta(minutes=1), 1.0),  # replay of key 1
-        (2, t0 + dt.timedelta(minutes=2), 2.0),
-        (2, t0 + dt.timedelta(minutes=2), 2.0),  # exact dup of key 2
-        (3, t0 + dt.timedelta(minutes=5), 3.0),
-    ]
-    src = str(tmp_path / "dup_events")
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp, value double"
-    ).write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id long, ts timestamp, value double"
-    ).parquet(src)
-    out = run_available_now(
-        dedup_within_watermark(stream, ["event_id"], watermark="10 minutes"),
-        "t_dedup_wm",
-        "append",
-    )
-    got = sorted((r.event_id, r.value) for r in out.collect())
-    assert got == [(1, 1.0), (2, 2.0), (3, 3.0)]
-
-
-def test_checkpointed_file_sink_resumes_exactly_once(spark, tmp_path):
-    """Two availableNow runs over a growing source with the same
-    checkpoint must write each input row exactly once (offset log
-    skips consumed files; commit log hides partial output)."""
-    import datetime as dt
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import stream_to_parquet
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    t0 = dt.datetime(2024, 1, 1)
-    first = [(i, t0, float(i)) for i in range(5)]
-    spark.createDataFrame(
-        first, "event_id long, ts timestamp, value double"
-    ).write.mode("append").parquet(src)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, value double"
-        ).parquet(src)
-        stream_to_parquet(stream, sink, ckpt)
-
-    run_once()
-    assert spark.read.parquet(sink).count() == 5
-
-    second = [(i, t0, float(i)) for i in range(5, 8)]
-    spark.createDataFrame(
-        second, "event_id long, ts timestamp, value double"
-    ).write.mode("append").parquet(src)
-    run_once()
-    got = sorted(r.event_id for r in spark.read.parquet(sink).collect())
-    assert got == list(range(8))  # old rows not rewritten, new rows once
-
-
 def test_streaming_sessionize_matches_batch(spark, smoke_dir, batch_events):
     """session_window sessionization over a stream (watermarked) must
     reproduce the batch result under availableNow replay."""
@@ -399,66 +333,13 @@ def test_merge_sinks_distinguish_missing_from_unreadable():
     )
 
 
-def test_stream_vectors_to_ivf_index_incremental(spark, tmp_path, smoke_dir):
-    """Streaming index maintenance: micro-batched vectors land in the
-    persisted IVF index across runs; searches after each wave see
-    everything ingested so far."""
-    from pyspark.sql import functions as F
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
-        stream_vectors_to_ivf_index,
-    )
-
-    emb = load_table(spark, smoke_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    base = emb.filter(F.col("vec_id") % 3 == 0)
-    index = str(tmp_path / "index")
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    lvec.build_ivf_index(base, index, n_cells=4)
-
-    def run_once():
-        stream = spark.readStream.schema(
-            "vec_id long, embedding array<double>"
-        ).parquet(src)
-        stream_vectors_to_ivf_index(stream, index, ckpt)
-
-    wave1 = emb.filter(F.col("vec_id") % 3 == 1).limit(4)
-    wave1.write.mode("append").parquet(src)
-    run_once()
-    stored = {r.vec_id for r in spark.read.parquet(f"{index}/cells").collect()}
-    assert {r.vec_id for r in wave1.collect()} <= stored
-
-    wave2 = emb.filter(F.col("vec_id") % 3 == 2).limit(4)
-    wave2.write.mode("append").parquet(src)
-    run_once()
-    stored = {r.vec_id for r in spark.read.parquet(f"{index}/cells").collect()}
-    assert {r.vec_id for r in wave2.collect()} <= stored
-    assert {r.vec_id for r in base.collect()} <= stored
-
-    # a streamed vector is its own nearest neighbor under full probe
-    target = wave2.limit(1)
-    q = target.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    hits = lvec.search_ivf_index(spark, index, q, k=1, n_probe=4).collect()
-    assert hits and hits[0].vec_id == hits[0].query_id
-
-
-@pytest.mark.parametrize("indexed", [False, True])
-def test_stream_dedup_ingest_sequential_admission(spark, tmp_path, indexed):
+def test_stream_dedup_ingest_sequential_admission(spark, tmp_path):
     """Streaming dedup ingest: batch k must anti-join against the
-    admitted corpus of ALL prior batches, in BOTH the recompute mode
-    and the persisted band-key-index mode (which must admit the
-    identical set).  Regression pin for the stale-cache bug: the
-    banded staging persists fragments over the corpus path, and
-    without a per-batch release Spark's cache manager substitutes
-    batch k-1's file listing into batch k's corpus read — wave-2
-    near-dups of wave-1 docs were silently admitted."""
+    admitted corpus of ALL prior batches.  Regression pin for the
+    stale-cache bug: the banded staging persists fragments over the
+    corpus path, and without a per-batch release Spark's cache manager
+    substitutes batch k-1's file listing into batch k's corpus read —
+    wave-2 near-dups of wave-1 docs were silently admitted."""
     import glob
     import os
     import shutil
@@ -498,33 +379,22 @@ def test_stream_dedup_ingest_sequential_admission(spark, tmp_path, indexed):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    stream_dedup_ingest_to_parquet(
-        stream,
-        table,
-        ckpt,
-        index_path=str(tmp_path / "ing_index") if indexed else None,
-    )
+    stream_dedup_ingest_to_parquet(stream, table, ckpt)
     got = {
         r.doc_id: r.ingest_batch
         for r in spark.read.parquet(table).collect()
     }
     assert got == {1: 0, 2: 1, 20: 1, 5: 2}
-    if indexed:
-        idx = spark.read.parquet(str(tmp_path / "ing_index"))
-        assert sorted(r.doc_id for r in idx.collect()) == [1, 2, 5, 20]
 
 
-@pytest.mark.parametrize("indexed", [False, True])
-def test_stream_dedup_ingest_replay_ignores_own_partition(
-    spark, tmp_path, indexed
-):
+def test_stream_dedup_ingest_replay_ignores_own_partition(spark, tmp_path):
     """Crash-replay pin: a crash between batch k's partition write and
     its checkpoint commit leaves table/<batch>=k on disk.  The replay
     must NOT read that partition back as corpus — docs would reject as
     exact SELF-duplicates and the partition would be overwritten
     empty (silent loss).  Simulated by pre-seeding the batch-2
-    partition (and index partition) with the crashed attempt's output
-    before the stream runs."""
+    partition with the crashed attempt's output before the stream
+    runs."""
     import glob
     import os
     import shutil
@@ -542,7 +412,6 @@ def test_stream_dedup_ingest_replay_ignores_own_partition(
     src = str(tmp_path / "rp_src")
     table = str(tmp_path / "rp_table")
     ckpt = str(tmp_path / "rp_ckpt")
-    index = str(tmp_path / "rp_index")
     os.makedirs(src)
     for k, rows in enumerate(waves):
         stage = str(tmp_path / f"rp_stage{k}")
@@ -556,24 +425,12 @@ def test_stream_dedup_ingest_replay_ignores_own_partition(
     spark.createDataFrame(waves[2], schema).write.mode("overwrite").parquet(
         f"{table}/ingest_batch=2"
     )
-    if indexed:
-        # ...and, in indexed mode, its features too
-        from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
-            _delta_features,
-        )
-
-        _delta_features(
-            spark.createDataFrame(waves[2], schema),
-            "doc_id", "text", 6, 3, 3,
-        ).write.mode("overwrite").parquet(f"{index}/ingest_batch=2")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    stream_dedup_ingest_to_parquet(
-        stream, table, ckpt, index_path=index if indexed else None
-    )
+    stream_dedup_ingest_to_parquet(stream, table, ckpt)
     got = {
         r.doc_id: r.ingest_batch
         for r in spark.read.parquet(table).collect()
@@ -830,73 +687,6 @@ def test_stream_increment_counts_numeric_shaped_string_partition(spark, tmp_path
             "spark.sql.sources.partitionColumnTypeInference.enabled", prev
         )
     assert got == {("a", "01"): (2, 3.0), ("b", "2"): (1, 10.0)}
-
-
-def test_stream_dedup_ingest_mode_migration_backfills_index(spark, tmp_path):
-    """Switching a recompute-mode stream to index_path= must NOT admit
-    duplicates of the pre-switch corpus: corpus-exists-but-index-
-    missing triggers a one-time feature backfill (previously the
-    missing index read as bootstrap and the old corpus stayed
-    invisible to dedup forever)."""
-    import glob
-    import os
-    import shutil
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
-        stream_dedup_ingest_to_parquet,
-    )
-
-    base = str(tmp_path)
-    src = f"{base}/src"
-    os.makedirs(src)
-
-    def _wave(rows, name, mtime):
-        stage = f"{base}/stage_{name}"
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(stage)
-        dst = f"{src}/{name}.parquet"
-        shutil.move(glob.glob(f"{stage}/part-*.parquet")[0], dst)
-        os.utime(dst, (mtime, mtime))
-
-    _wave(
-        [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")],
-        "w0",
-        1_000_000_000,
-    )
-
-    def _run(ckpt, **kw):
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        stream_dedup_ingest_to_parquet(
-            stream, f"{base}/corpus", ckpt, **kw
-        )
-
-    # phase 1: recompute mode builds the corpus, NO index
-    _run(f"{base}/ckpt")
-    assert not os.path.exists(f"{base}/index")
-
-    # phase 2: same checkpoint, indexed mode; the new wave holds one
-    # exact duplicate of the pre-switch corpus and one new doc
-    _wave(
-        [(10, "alpha beta gamma delta"), (11, "iota kappa lambda mu")],
-        "w1",
-        1_000_001_000,
-    )
-    _run(f"{base}/ckpt", index_path=f"{base}/index")
-
-    got = sorted(
-        r.doc_id for r in spark.read.parquet(f"{base}/corpus").collect()
-    )
-    assert got == [1, 2, 11], got  # 10 rejected against the OLD corpus
-    # the backfilled index covers the pre-switch docs
-    idx_ids = sorted(
-        r.doc_id for r in spark.read.parquet(f"{base}/index").collect()
-    )
-    assert set([1, 2]) <= set(idx_ids), idx_ids
 
 
 def test_stream_line_dedup_sequential_lines(spark, tmp_path):

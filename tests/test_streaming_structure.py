@@ -65,7 +65,6 @@ def test_available_now_trigger_only_in_windows():
     assert sites == [
         (windows, "drain"),
         (windows, "run_available_now"),
-        (windows, "stream_to_parquet"),
     ]
 
 

@@ -16,21 +16,18 @@ Order statistics are EXACT arithmetic (midpoint of two doubles, no
 libm), so numpy here and DuckDB's native ``mad()`` in the oracle agree
 bit-for-bit.
 
-Scale caveat — and the reason a native twin ships alongside: a
-grouped-agg UDF materializes EACH GROUP's column as one in-memory
-series on one executor, so it only fits bounded or high-cardinality
-groups.  For few huge groups (this table's 5 event types at 100 TB),
-:func:`mad_native` computes the same statistic as two exact
-``median`` aggregates — distributed sort-based partials, no Python,
-no whole-group materialization — at the cost of a second pass over
-the input.
+Scale caveat: a grouped-agg UDF materializes EACH GROUP's column as
+one in-memory series on one executor, so it only fits bounded or
+high-cardinality groups.  For few huge groups (this table's 5 event
+types at 100 TB) the same statistic is two exact ``median``
+aggregates joined on the key — distributed sort-based partials, no
+Python, no whole-group materialization — at the cost of a second pass
+over the input.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
@@ -44,21 +41,3 @@ def median_abs_deviation(v: pd.Series) -> float:
         return None
     med = float(np.median(arr))
     return float(np.median(np.abs(arr - med)))
-
-
-def mad_native(
-    df: DataFrame, key: str, val: str, out: str = "value_mad"
-) -> DataFrame:
-    """MAD via two native ``median`` aggregates — the huge-group scale
-    path (see module docstring).  Bit-identical to the UDAF: both
-    medians are exact order statistics.  The self-join is
-    null-safe-keyed: ``groupBy`` keeps a NULL group on both paths, so
-    a plain equi-join (NULL ≠ NULL) would silently drop that group
-    from the native result while the UDAF path returns it."""
-    med = df.groupBy(key).agg(F.median(val).alias("__m"))
-    return (
-        df.join(med, on=df[key].eqNullSafe(med[key]))
-        .drop(med[key])
-        .groupBy(key)
-        .agg(F.median(F.abs(F.col(val) - F.col("__m"))).alias(out))
-    )

@@ -365,6 +365,17 @@ def _jaccard_postings(
     )
 
 
+def _retained_df(postings: DataFrame, max_df: int | None) -> DataFrame:
+    """``(__s, __df)`` document frequency of every shingle in staged
+    ``(__id, __s)`` postings, cut to ``__df <= max_df`` when set — the
+    one place a ``max_df`` becomes a retained-shingle relation, so a
+    plan can never run on a relation cut at a different ``max_df``."""
+    dfreq = postings.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
+    if max_df is not None:
+        dfreq = dfreq.filter(F.col("__df") <= max_df)
+    return dfreq
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -372,8 +383,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 1000,
-    postings: DataFrame | None = None,
-    dfreq: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted shingle
     index — the deterministic complement to the probabilistic MinHash
@@ -389,13 +398,7 @@ def ngram_jaccard_pairs(
     no near-dup signal (a pair sharing ONLY ultra-common shingles is
     not a near-duplicate).  With ``max_df`` set, sizes and Jaccard are
     computed over the retained shingle space (documented, mirrored in
-    the SQL twin).  ``postings`` accepts a prebuilt staged
-    ``(__id, __s)`` relation from :func:`_jaccard_postings` (the auto
-    dispatcher's no-retokenize handoff); ``dfreq`` accepts the staged
-    retained ``(__s, __df)`` document-frequency relation the
-    dispatcher's profile already aggregated (r16 opt, guide §2.4 —
-    two consumers keyed the same way share ONE aggregate; the rows
-    are identical to recomputing it here).
+    the SQL twin).
     """
     # Persist the RAW postings before anything touches them (via the
     # staging registry — callers release after materialization): the
@@ -403,27 +406,28 @@ def ngram_jaccard_pairs(
     # aggregate, both sides of the self-join, the size aggregate) and
     # re-tokenizing the corpus per reference dominates runtime.  At
     # warehouse scale this is a staging table.
-    sh = (
-        postings
-        if postings is not None
-        else _jaccard_postings(df, id_col, text_col, shingle_n)
-    )
+    sh = _jaccard_postings(df, id_col, text_col, shingle_n)
+    dfreq = None if max_df is None else _retained_df(sh, max_df)
+    return _pairs_from_postings(sh, dfreq, threshold)
+
+
+def _pairs_from_postings(
+    sh: DataFrame, dfreq: DataFrame | None, threshold: float
+) -> DataFrame:
+    """:func:`ngram_jaccard_pairs` over staged raw postings ``sh``,
+    restricted to the shingles of the retained ``(__s, __df)``
+    relation ``dfreq`` (``None``: no df cut).  The auto dispatcher
+    hands in the relation its profile already aggregated (r16 opt,
+    guide §2.4 — two consumers keyed the same way share ONE
+    aggregate; the rows are identical to recomputing it)."""
     if dfreq is not None:
-        sh = stage(sh.join(dfreq.select("__s"), on="__s"))
-    elif max_df is not None:
-        kept = (
-            sh.groupBy("__s")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("__s")
-        )
         # Stage the FILTERED postings too (r16 opt, guide §1.2): the
         # plan reads them three times (size aggregate + both self-join
         # sides), and each un-staged reference re-runs the df
         # aggregate + the retain join over the cached raw postings —
         # planned-time exchange reuse does not dedup them (38
         # InMemoryTableScans in the before-plan).  Rows identical.
-        sh = stage(sh.join(kept, on="__s"))
+        sh = stage(sh.join(dfreq.select("__s"), on="__s"))
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
     shared = (
         sh.alias("a")
@@ -611,8 +615,6 @@ def ngram_jaccard_pairs_prefix(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 1000,
-    postings: DataFrame | None = None,
-    dfreq: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`ngram_jaccard_pairs` with PPJoin-style PREFIX FILTERING
     (Chaudhuri et al. ICDE 2006; Xiao et al. TODS 2011) — identical
@@ -650,18 +652,17 @@ def ngram_jaccard_pairs_prefix(
     profile; both return identical rows.  ``max_df`` stays as the
     boilerplate backstop; sizes and Jaccard are computed over the
     retained-shingle space exactly as in the base operator.
-    ``postings`` accepts a prebuilt staged ``(__id, __s)`` relation
-    from :func:`_jaccard_postings`.
     """
-    sh = (
-        postings
-        if postings is not None
-        else _jaccard_postings(df, id_col, text_col, shingle_n)
-    )
-    if dfreq is None:
-        dfreq = sh.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-        if max_df is not None:
-            dfreq = dfreq.filter(F.col("__df") <= max_df)
+    sh = _jaccard_postings(df, id_col, text_col, shingle_n)
+    return _prefix_pairs_from_postings(sh, _retained_df(sh, max_df), threshold)
+
+
+def _prefix_pairs_from_postings(
+    sh: DataFrame, dfreq: DataFrame, threshold: float
+) -> DataFrame:
+    """:func:`ngram_jaccard_pairs_prefix` over staged raw postings
+    ``sh`` and their retained ``(__s, __df)`` relation ``dfreq`` (the
+    df also orders each prefix)."""
     # staged (r16 opt, guide §1.2): read three times — the ranking
     # window plus both candidate-verify sides; see ngram_jaccard_pairs
     sh = stage(sh.join(dfreq, on="__s"))
@@ -721,9 +722,8 @@ def ngram_jaccard_pairs_prefix(
 
 def ngram_jaccard_candidate_profile(
     postings: DataFrame,
+    dfreq: DataFrame,
     threshold: float,
-    max_df: int | None = 1000,
-    dfreq: DataFrame | None = None,
 ) -> dict[str, int]:
     """One-pass-per-plan candidate-volume predictor over staged raw
     postings: the EXACT pre-dedup candidate-pair counts the base and
@@ -737,18 +737,12 @@ def ngram_jaccard_candidate_profile(
     driver-side scalars (a bounded 2-value collect, same class as the
     LSH ``band_bucket_profile`` pre-flight).
 
-    ``dfreq`` accepts the STAGED retained ``(__s, __df)`` relation so
-    the dispatcher can share one df aggregate between this profile
-    and whichever plan wins (r16 opt).  The two plan sums are
-    unioned into ONE 2-row collect — one driver job instead of two
-    serial ones; identical integers either way (the union branches
-    are the exact same aggregates)."""
-    if dfreq is None:
-        dfreq = postings.groupBy("__s").agg(
-            F.count(F.lit(1)).alias("__df")
-        )
-        if max_df is not None:
-            dfreq = dfreq.filter(F.col("__df") <= max_df)
+    ``dfreq`` is the retained ``(__s, __df)`` relation of
+    ``postings`` (:func:`_retained_df`), which the dispatcher stages
+    once and shares between this profile and whichever plan wins
+    (r16 opt).  The two plan sums are unioned into ONE 2-row collect —
+    one job instead of two serial ones; identical integers
+    either way (the union branches are the exact same aggregates)."""
     pair_sum = F.sum(
         (F.col("__df") * (F.col("__df") - 1) / 2).cast("bigint")
     )
@@ -832,33 +826,19 @@ def ngram_jaccard_pairs_auto(
 
     r16 opt (guide §2.4): the retained ``(__s, __df)`` aggregate is
     staged ONCE and shared by the profile AND the chosen plan — the
-    base plan's ``kept`` semi-join and the prefix plan's df join are
+    base plan's retain semi-join and the prefix plan's df join are
     the same relation the profile already computed, so dispatching no
     longer costs an extra full df aggregate over the postings; the
     profile's two plan sums collect in one 2-row job.  Same counts,
     same dispatch decision, identical output rows."""
     sh = _jaccard_postings(df, id_col, text_col, shingle_n)
-    dfreq = sh.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    if max_df is not None:
-        dfreq = dfreq.filter(F.col("__df") <= max_df)
-    dfreq = stage(dfreq)
-    prof = ngram_jaccard_candidate_profile(
-        sh, threshold, max_df, dfreq=dfreq
-    )
+    dfreq = stage(_retained_df(sh, max_df))
+    prof = ngram_jaccard_candidate_profile(sh, dfreq, threshold)
     use_prefix = prof["candidates_full"] > prefer_ratio * max(
         prof["candidates_prefix"], 1
     )
-    op = ngram_jaccard_pairs_prefix if use_prefix else ngram_jaccard_pairs
-    return op(
-        df,
-        id_col=id_col,
-        text_col=text_col,
-        shingle_n=shingle_n,
-        threshold=threshold,
-        max_df=max_df,
-        postings=sh,
-        dfreq=dfreq,
-    )
+    op = _prefix_pairs_from_postings if use_prefix else _pairs_from_postings
+    return op(sh, dfreq, threshold)
 
 
 def _hex4_to_int(hexstr: Column) -> Column:

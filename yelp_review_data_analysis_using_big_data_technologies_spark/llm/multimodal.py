@@ -306,17 +306,6 @@ def sample_frames(
     )
 
 
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize pass-through: REAL pipelines re-encode payloads here via
-    the same mapInPandas shape as :func:`extract_features`; the stub
-    adds a ``target_dims`` column and leaves payload bytes (and the
-    ``meta`` struct) untouched, so plan shape/testing stay honest
-    about the data volume moved."""
-    return media.withColumn(
-        "target_dims", F.array(F.lit(width), F.lit(height))
-    )
-
-
 #: (format name, magic prefix) in DETECTION ORDER — prefix classes
 #: only (full header validation is the decode step's job); WAV is
 #: special-cased (RIFF....WAVE has a hole at bytes 4-8)

@@ -144,19 +144,3 @@ SELECT doc_id, n_tokens, offset_tokens,
        CAST(offset_tokens // {budget} AS BIGINT) AS bin_id
 FROM __c ORDER BY doc_id
 """
-
-
-def bin_fill_stats(packed: DataFrame, budget: int = 512) -> DataFrame:
-    """Per-bin fill report over :func:`pack_bins` output: docs per bin,
-    token total, and fill ratio vs the budget (straddling bins exceed
-    1.0 by design).  One partial-agg groupBy on ``bin_id``."""
-    return (
-        packed.groupBy("bin_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("bin_tokens"),
-        )
-        .withColumn(
-            "fill_ratio", F.round(F.col("bin_tokens") / F.lit(budget), 6)
-        )
-    )

@@ -94,33 +94,6 @@ def repetition_profile(
     )
 
 
-def repetition_filter(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    max_top_token_frac: float = 0.2,
-    max_dup_ngram_frac: float = 0.3,
-) -> DataFrame:
-    """Documents passing the repetition thresholds (the Gopher-rule
-    composition: profile → threshold → anti-join the FAILURES away).
-
-    Anti-join of failures, not semi-join of passes: the profile only
-    scores docs with tokens, so a semi-join would silently delete
-    UNSCORED docs (NULL/empty text) that violate no repetition
-    threshold.  A repetition filter's job is repetition; dropping
-    empty docs belongs to an explicit length/not-null rule."""
-    fail = (
-        repetition_profile(df, id_col, text_col, shingle_n)
-        .filter(
-            (F.col("top_token_frac") > max_top_token_frac)
-            | (F.col("dup_ngram_frac") > max_dup_ngram_frac)
-        )
-        .select(id_col)
-    )
-    return df.join(fail, on=id_col, how="left_anti")
-
-
 def repetition_profile_sql(
     shingle_n: int = 3, table: str = "documents", where: str = "TRUE"
 ) -> str:

@@ -18,11 +18,10 @@ explicit lifecycle, never an implicitly-leaked cache.
 
 Scoping (r10): the registry is keyed, never one flat list.  By
 default every entry is keyed by the CALLING THREAD, so two queries
-running concurrently in one session — e.g. the documented
-``stream_vectors_to_ivf_index`` maintenance loop (its micro-batches
-run through ``streaming.windows.drain``, which releases each batch's
-staging on the stream-execution thread) alongside a batch LSH query
-on the main thread — can no longer unpersist each other's staging
+running concurrently in one session — e.g. a streaming ingest (its
+micro-batches run through ``streaming.windows.drain``, which releases
+each batch's staging on the stream-execution thread) alongside a
+batch LSH query on the main thread — can no longer unpersist each other's staging
 mid-flight.  Correctness never depended on it (persist is an
 optimization) but the measured 4-7× tokenizer re-run would silently
 return.  For stage/release pairs that legitimately cross threads,

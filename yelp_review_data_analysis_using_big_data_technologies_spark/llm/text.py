@@ -180,21 +180,6 @@ def shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
     )
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Word ``n``-gram shingles: overlapping windows of ``n`` tokens
-    joined by a single space.  Docs shorter than ``n`` tokens yield an
-    empty array.
-
-    NOTE (hot paths): as a single inline expression the ``split``
-    feeding the lambda is re-evaluated PER SHINGLE — codegen does not
-    do common-subexpression elimination across a higher-order
-    function boundary (measured 7.5× at sf0.1).  Use
-    :func:`with_shingles` to stage tokens in their own projection
-    when shingling a whole corpus; keep this form for oracle-SQL
-    parity and one-off expressions."""
-    return shingles_from_tokens(tokens(text), n)
-
-
 def shingled(
     df,
     keep_cols: list[str],
@@ -218,29 +203,6 @@ def shingled(
     return staged.select(
         *keep_cols, shingles_from_tokens(tok, n).alias(out)
     )
-
-
-def fingerprint(text: Column | str, n: int = 3) -> Column:
-    """Rolling-hash document fingerprint: the minimum md5 over the word
-    ``n``-gram shingles (equivalently, a 1-hash MinHash signature).
-    Documents sharing a fingerprint share at least one shingle — the
-    cheapest near-dup bucket key."""
-    return F.array_min(F.transform(shingles(text, n), F.md5))
-
-
-def minhash_signature(
-    text: Column | str, num_hashes: int = 6, n: int = 3
-) -> Column:
-    """MinHash signature: array of ``num_hashes`` values, the i-th
-    being ``min(md5(i || ':' || shingle))`` over the doc's shingles.
-
-    Salting md5 with the hash index gives ``num_hashes`` independent
-    hash families while staying portable across engines (Spark and
-    DuckDB md5 agree byte-for-byte; their native ``hash()`` functions
-    do not).  P[sig_i matches] = Jaccard similarity, the classic
-    MinHash estimator.
-    """
-    return minhash_signature_from(shingles(text, n), num_hashes)
 
 
 def minhash_signature_from(shingle_col: Column, num_hashes: int = 6) -> Column:

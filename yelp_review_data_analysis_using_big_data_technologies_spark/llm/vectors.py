@@ -1079,40 +1079,22 @@ def _cell_scores(
     return F.expr("array(" + ", ".join(parts) + ")")
 
 
-def assign_cells(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign every corpus vector to its nearest centroid (max cosine,
-    ties → smallest ``cell_id``).
-
-    Plan shape at scale: the K-row centroid table is inlined as a
-    literal array-of-structs, so assignment is ONE narrow projection
-    over the corpus scan — ``array_max`` over a K-element ``transform``
-    per row.  Zero shuffles, zero joins, zero broadcast exchanges; the
-    previous crossJoin + partial-agg arg-max shuffled the full vector
-    column once for no benefit."""
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = embeddings.select(
-        F.col(id_col), vcast.alias("__v"), norm(vcast).alias("__n")
-    )
-    return _assign_cells_literal(
-        corpus, _collect_centroids(centroids), id_col
-    ).drop("__n")
-
-
 def _assign_cells_literal(
     corpus: DataFrame,
     cent_rows: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Map-side nearest-cell over a pre-projected ``(id, …, __v, __n)``
-    corpus (``__n`` = precomputed row norm; staging it in the corpus
-    projection keeps the per-centroid score to one dot pass).  All
-    input columns pass through (the index builder may carry metadata
-    columns alongside the vector)."""
+    """Map-side nearest-cell (max cosine, ties → smallest ``cell_id``)
+    over a pre-projected ``(id, …, __v, __n)`` corpus (``__n`` =
+    precomputed row norm; staging it in the corpus projection keeps
+    the per-centroid score to one dot pass).  All input columns pass
+    through (the index builder may carry metadata columns alongside
+    the vector).
+
+    Plan shape at scale: the K-row centroid table is inlined as a
+    literal array-of-structs, so assignment is ONE narrow projection
+    over the corpus scan — ``array_max`` over a K-element ``transform``
+    per row.  Zero shuffles, zero joins, zero broadcast exchanges."""
     best = F.array_max(_cell_scores("__v", "__n", cent_rows))
     return corpus.select(
         "*", (-best["nc"]).cast("int").alias("cell_id")
@@ -1231,7 +1213,7 @@ def train_centroids_kmeans(
 ) -> DataFrame:
     """Production coarse quantizer: fit KMeans (pyspark.ml — Lloyd
     iterations run distributed) and return centroids in the same
-    ``(cell_id, __c)`` shape :func:`assign_cells` expects.  Not
+    ``(cell_id, __c)`` shape the IVF builders take.  Not
     oracle-checkable (iterative); recall is unit-tested instead."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector, vector_to_array
@@ -1527,7 +1509,8 @@ def pq_encode_mse(
     projection over the corpus scan: per subspace an ``array_max``
     over k ``(−dist, −code)`` structs picks the argmin code with
     deterministic smallest-code tie-break — zero joins, zero
-    shuffles, the same literal-centroid shape as ``assign_cells``.
+    shuffles, the same literal-centroid shape as
+    :func:`_assign_cells_literal`.
     Reconstruction (codes → centroid concat → squared error) rides
     the same projection.
     """
@@ -1635,7 +1618,7 @@ def top_k_ann_ivfpq(
     Index side (what a 100 TB deployment would persist):
 
     - coarse quantizer: ``n_cells`` centroids; every corpus vector
-      stores its ``cell_id`` (:func:`assign_cells` shape),
+      stores its ``cell_id`` (:func:`_assign_cells_literal`),
     - PQ codes of the RESIDUAL ``v − centroid(cell)`` — ``m`` codes of
       ``log2(k_codes)`` bits each (here 4×4 = 16 bits/vector vs
       64×4 B raw) from per-subspace KMeans codebooks
@@ -2421,39 +2404,6 @@ def add_to_ivfpq_index(
     mismatch raises; route real updates through
     :func:`delete_from_ivf_index` + re-add, or a rebuild."""
     _merge(_PQ, delta, path, id_col, vec_col, params)
-
-
-def update_ivfpq_index(
-    delta: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Sanctioned TRUE-update path for a persisted IVF-PQ index (r15,
-    the r14 verdict's #7): the r14 guard makes
-    :func:`add_to_ivfpq_index` reject a changed vector for a stored
-    id — the half-apply hazard — and points here.  This helper routes
-    the update the documented way: erase the delta's ids from every
-    index relation (:func:`delete_from_ivf_index` — codes cells
-    rewritten partition-pruned, by-id re-rank row dropped), then
-    re-admit the delta through the ordinary add path, which
-    re-assigns against the FROZEN centroids (a changed vector may
-    land in a different cell — exactly why in-place code replacement
-    is unsound) and re-encodes with the FROZEN codebooks.
-
-    Replay-safe end to end: a crash before the delete replays the
-    whole call; between delete and add, the re-run's delete is an
-    idempotent no-op on the already-absent ids and the add completes;
-    after the add, the re-run deletes the freshly written rows and
-    re-admits the identical vectors — every path converges to the
-    same final relation (pinned in tests/test_ivfpq_index.py).
-    Unchanged rows for stored ids are legal (the add path's
-    anti-joins treat them as replays).  Cost is delta-proportional on
-    the codes side (only touched cells rewrite) plus the by-id
-    relation's anti-join rewrites — the N+δ maintenance shape, not a
-    rebuild."""
-    delete_from_ivf_index(delta.select(id_col), path, id_col=id_col)
-    add_to_ivfpq_index(delta, path, id_col=id_col, vec_col=vec_col)
 
 
 def delete_from_ivf_index(

@@ -72,8 +72,8 @@ def winnow_fingerprints(
       ``w + k - 1`` tokens is caught).
 
     Short docs: with ``0 < m < w`` shingles there is one clamped
-    window (the global min — winnowing degrades to the 1-hash
-    MinHash :func:`~.text.fingerprint`); with no shingles (empty or
+    window (the global min — winnowing degrades to a 1-hash
+    MinHash); with no shingles (empty or
     NULL text, or fewer than ``k`` tokens) the doc is absent from the
     output.  NULL ids are not fingerprintable and are dropped — the
     same contract as pack_bins.

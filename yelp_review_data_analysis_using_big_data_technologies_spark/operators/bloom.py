@@ -39,14 +39,13 @@ final equi-join removes them).  Outer joins are rejected — pruning the
 probe side would drop null-extended rows.
 
 Sizing: for ``n`` keys and false-positive rate ``p``, the textbook
-``m = -n·ln p / (ln 2)²`` and ``h = (m/n)·ln 2``.  ``suggest_bits``
-implements it; the default 2^23 bits / 5 hashes holds ~1M keys at
+``m = -n·ln p / (ln 2)²`` and ``h = (m/n)·ln 2``, with ``m`` rounded
+up to a power of two so the double-hash stride (odd step) stays
+coprime with it; the default 2^23 bits / 5 hashes holds ~1M keys at
 p ≈ 1%.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -59,22 +58,6 @@ _SKETCH_COLS = (_WORDS, _NBITS, _NHASH)
 
 DEFAULT_NUM_BITS = 1 << 23
 DEFAULT_NUM_HASHES = 5
-
-
-def suggest_bits(expected_keys: int, fpp: float = 0.01) -> tuple[int, int]:
-    """Textbook Bloom sizing, rounded up to a power of two so the
-    double-hash stride (odd step) stays coprime with ``m``."""
-    if expected_keys <= 0:
-        raise ValueError(f"expected_keys must be positive: {expected_keys}")
-    if not (0.0 < fpp < 1.0):
-        raise ValueError(f"fpp must be in (0, 1): {fpp}")
-    m = -expected_keys * math.log(fpp) / (math.log(2) ** 2)
-    num_bits = 1 << max(6, math.ceil(math.log2(m)))
-    # h from the PRE-rounding textbook m: the power-of-two round-up can
-    # nearly double the bits, and h scaled to the inflated m would burn
-    # ~2x the probe CPU for an fpp already better than requested
-    num_hashes = max(1, round(m / expected_keys * math.log(2)))
-    return num_bits, min(num_hashes, 16)
 
 
 def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:

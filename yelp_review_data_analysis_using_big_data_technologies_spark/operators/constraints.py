@@ -1,6 +1,5 @@
 """Batch data-quality constraint checks (SURVEY.md §2 catalog/QA
-surface — the batch complement of ``sources.quality``'s write-time
-observe gate).
+surface).
 
 The reference trusts its inputs (no test file, tests/test.py is
 empty); a warehouse deployment runs dbt-test-shaped assertions over

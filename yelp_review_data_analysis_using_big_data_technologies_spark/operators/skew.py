@@ -1,9 +1,9 @@
 """Skew-handling primitives (SURVEY.md §4 "shuffle/partitioning").
 
 AQE's skew-join splitting (on in ``session.py``) covers sort-merge
-joins at runtime; these helpers cover the cases AQE can't touch — a
-broadcast-ineligible dimension joined on a hot key, and heavy per-key
-aggregation state — with the classic salting construction:
+joins at runtime; these helpers cover the case AQE can't touch — a
+broadcast-ineligible dimension joined on a hot key — with the classic
+salting construction:
 
 - the skewed (big) side gets a deterministic salt in ``[0, buckets)``
   derived by hashing the whole row, spreading one hot key over
@@ -11,8 +11,7 @@ aggregation state — with the classic salting construction:
 - the other side is replicated once per salt value (an ``explode`` of
   a literal range — ``buckets×`` its size, which is why this is for
   DIMENSION-sized right sides);
-- the join/aggregation runs on ``(key, salt)`` and, for aggregations,
-  a second cheap pass merges the per-salt partials.
+- the join runs on ``(key, salt)``.
 
 Semantically transparent: results equal the unsalted operation (the
 driver checks the salted join against a plain-SQL oracle).
@@ -97,46 +96,3 @@ def salted_join(
     salted_left = with_salt(left, buckets)
     salted_right = replicate_for_salt(right, buckets)
     return salted_left.join(salted_right, on=keys + [SALT_COL], how=how).drop(SALT_COL)
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: Sequence[str],
-    buckets: int = 8,
-    **aggs: tuple[str, str],
-) -> DataFrame:
-    """Two-phase aggregation for skewed grouping keys.
-
-    ``aggs`` maps output column → ``(function, input_col)`` with
-    function in {count, sum, min, max}: decomposable aggregates whose
-    per-salt partials merge exactly (count merges by sum).  Phase 1
-    aggregates on ``(keys..., salt)``; phase 2 merges partials per key
-    — the hot key's heavy lifting happens in ``buckets`` parallel
-    tasks, the second shuffle carries ``buckets`` rows per key.
-
-    ``count`` follows SQL semantics: ``("count", col)`` counts NON-NULL
-    values of ``col`` exactly like ``F.count(col)``; pass ``("count",
-    "*")`` for a row count.
-    """
-    merge_fn = {"count": "sum", "sum": "sum", "min": "min", "max": "max"}
-    bad = {fn for _out, (fn, _c) in aggs.items() if fn not in merge_fn}
-    if bad:
-        raise ValueError(
-            f"non-decomposable aggregate(s) {sorted(bad)}: salted "
-            f"two-phase merging supports only {sorted(merge_fn)} "
-            "(avg = sum/count composed by the caller)"
-        )
-    phase1 = with_salt(df, buckets).groupBy(*keys, SALT_COL).agg(
-        *[
-            getattr(F, fn)(
-                F.lit(1) if (fn == "count" and col == "*") else col
-            ).alias(out)
-            for out, (fn, col) in aggs.items()
-        ]
-    )
-    return phase1.groupBy(*keys).agg(
-        *[
-            getattr(F, merge_fn[fn])(out).alias(out)
-            for out, (fn, _col) in aggs.items()
-        ]
-    )

@@ -2242,99 +2242,6 @@ def doc_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {
-    "doc_exact_dedup": doc_exact_dedup,
-    "doc_normalized_dedup": doc_normalized_dedup,
-    "doc_near_dup_banded": doc_near_dup_banded,
-    "doc_pagerank": doc_pagerank,
-    "doc_pagerank_weighted": doc_pagerank_weighted,
-    "corpus_keep_central": corpus_keep_central,
-    "doc_ngram_jaccard": doc_ngram_jaccard,
-    "doc_ngram_jaccard_prefix": doc_ngram_jaccard_prefix,
-    "doc_ngram_jaccard_auto": doc_ngram_jaccard_auto,
-    "doc_cross_corpus_jaccard": doc_cross_corpus_jaccard,
-    "pipeline_split_leakage": pipeline_split_leakage,
-    "doc_graph_triangles": doc_graph_triangles,
-    "doc_graph_communities": doc_graph_communities,
-    "corpus_shuffle_order": corpus_shuffle_order,
-    "doc_near_dup_minhash_ml": doc_near_dup_minhash_ml,
-    "doc_near_dup_removal": doc_near_dup_removal,
-    "corpus_clean_pipeline": corpus_clean_pipeline,
-    "corpus_training_freeze": corpus_training_freeze,
-    "corpus_freeze_stats": corpus_freeze_stats,
-    "corpus_freeze_delta": corpus_freeze_delta,
-    "corpus_freeze_audit": corpus_freeze_audit,
-    "vocab_bpe_merges": vocab_bpe_merges,
-    "corpus_cluster_balance": corpus_cluster_balance,
-    "vocab_bpe_encode": vocab_bpe_encode,
-    "corpus_freeze_clustered": corpus_freeze_clustered,
-    "corpus_semantic_dedup": corpus_semantic_dedup,
-    "doc_dedup_delta": doc_dedup_delta,
-    "doc_simhash_buckets": doc_simhash_buckets,
-    "doc_simhash_near_dup": doc_simhash_near_dup,
-    "doc_dup_clusters": doc_dup_clusters,
-    "doc_dup_clusters_star": doc_dup_clusters_star,
-    "doc_dup_clusters_panel": doc_dup_clusters_panel,
-    "corpus_keep_best": corpus_keep_best,
-    "doc_chunk_dedup": doc_chunk_dedup,
-    "doc_weighted_sample": doc_weighted_sample,
-    "corpus_mixture_sample": corpus_mixture_sample,
-    "doc_pack_bins": doc_pack_bins,
-    "doc_decontaminated": doc_decontaminated,
-    "doc_repetition_profile": doc_repetition_profile,
-    "doc_pii_redact": doc_pii_redact,
-    "pipeline_split_panel": pipeline_split_panel,
-    "doc_tfidf_top_terms": doc_tfidf_top_terms,
-    "doc_token_chunks": doc_token_chunks,
-    "doc_lm_quality": doc_lm_quality,
-    "doc_tfidf_cosine_pairs": doc_tfidf_cosine_pairs,
-    "doc_dup_spans": doc_dup_spans,
-    "doc_dup_span_removal": doc_dup_span_removal,
-    "doc_winnow_fingerprints": doc_winnow_fingerprints,
-    "doc_winnow_pairs": doc_winnow_pairs,
-    "doc_gopher_rules": doc_gopher_rules,
-    "doc_importance_weights": doc_importance_weights,
-    "doc_line_dedup": doc_line_dedup,
-    "doc_c4_clean": doc_c4_clean,
-    "vec_quantize_int8": vec_quantize_int8,
-    "vec_quantize_pq": vec_quantize_pq,
-    "vec_cosine_near_dup": vec_cosine_near_dup,
-    "vec_cosine_near_dup_pinned": vec_cosine_near_dup_pinned,
-    "doc_text_stats": doc_text_stats,
-    "doc_token_counts": doc_token_counts,
-    "doc_lang_id": doc_lang_id,
-    "doc_fingerprint": doc_fingerprint,
-    "doc_profile": doc_profile,
-    "doc_quality_bands": doc_quality_bands,
-    "vec_top_k_bruteforce": vec_top_k_bruteforce,
-    "vec_top_k_ann_signlsh": vec_top_k_ann_signlsh,
-    "vec_top_k_ann_ivf": vec_top_k_ann_ivf,
-    "vec_ivf_index_search": vec_ivf_index_search,
-    "vec_ann_recall_profile": vec_ann_recall_profile,
-    "vec_ann_recall_profile_pq": vec_ann_recall_profile_pq,
-    "vec_filtered_topk": vec_filtered_topk,
-    "vec_filtered_ann": vec_filtered_ann,
-    "vec_filtered_ann_pq": vec_filtered_ann_pq,
-    "vec_top_k_ann_ivf_kmeans": vec_top_k_ann_ivf_kmeans,
-    "vec_ivfpq_index_search": vec_ivfpq_index_search,
-    "vec_ann_exhaustive_equiv": vec_ann_exhaustive_equiv,
-    "vec_centroid_distance": vec_centroid_distance,
-    "multimodal_features": multimodal_features,
-    "multimodal_frame_sample": multimodal_frame_sample,
-    "multimodal_integrity_audit": multimodal_integrity_audit,
-    "doc_bm25_topk": doc_bm25_topk,
-    "doc_hybrid_search_rrf": doc_hybrid_search_rrf,
-    "vec_mmr_rerank": vec_mmr_rerank,
-    "vec_mmr_rerank_batch": vec_mmr_rerank_batch,
-    "vec_dedup_delta": vec_dedup_delta,
-    "retrieval_serving_pipeline": retrieval_serving_pipeline,
-    "doc_prf_expansion": doc_prf_expansion,
-    "doc_bm25_prf_topk": doc_bm25_prf_topk,
-    "doc_vocab_coverage": doc_vocab_coverage,
-    "doc_graph_kcore": doc_graph_kcore,
-}
-
-
 def _quality_score_sql() -> str:
     """DuckDB twin of llm.text.quality_score — same term order so the
     doubles agree bit-for-bit."""

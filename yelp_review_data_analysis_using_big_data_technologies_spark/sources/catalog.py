@@ -252,12 +252,3 @@ def analyze_table(
     if columns:
         cols = ", ".join(_q(c) for c in columns)
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS {cols}")
-
-
-def table_names(spark: SparkSession, database: str | None = None) -> list[str]:
-    """List catalog tables in ``database`` (or the current one)."""
-    return sorted(
-        t.name
-        for t in spark.catalog.listTables(database)
-        if not t.isTemporary
-    )

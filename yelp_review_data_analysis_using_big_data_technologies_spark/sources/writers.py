@@ -490,121 +490,6 @@ def write_json(
     df.write.mode(mode).json(path)
 
 
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered parquet layout: ``repartitionByRange`` on the
-    cluster keys (one disjoint key range per output file, sampled
-    range boundaries) + ``sortWithinPartitions`` (monotone row groups
-    inside each file).  Every parquet footer then carries tight
-    min/max stats for the cluster keys, so range predicates skip
-    whole files and row groups — the single-key-prefix form of
-    Z-ordering, with no custom format needed.  Use for the columns
-    your hottest range filters hit (dates, ids); pick ``n_files`` ≈
-    data size / target file size (128-512 MB at warehouse scale)."""
-    _validate_path(path)
-    if not cluster_by:
-        raise ValueError("cluster_by must name at least one column")
-    (
-        df.repartitionByRange(n_files, *cluster_by)
-        .sortWithinPartitions(*cluster_by)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zorder_by: list[str],
-    n_files: int = 16,
-    bits: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """MULTI-key data-skipping layout: interleave the bits of each
-    (min-max normalized) Z-order key into one Morton code, then
-    range-partition + sort on it — points close in the N-dimensional
-    key space land in the same files, so every parquet footer carries
-    tight min/max on EVERY Z key and predicates on ANY of them skip
-    files (``write_clustered`` only skips on its leading key).
-
-    Normalization here is min-max over one bounded agg (deterministic,
-    single job); production systems scale by quantiles instead so
-    heavy skew can't crowd the code space — same layout machinery,
-    different scaling — which is the documented upgrade path.  Use
-    2-4 keys; each added key halves the per-key resolution
-    (``bits·k ≤ 63``)."""
-    _validate_path(path)
-    if not zorder_by or len(zorder_by) < 2:
-        raise ValueError("zorder_by needs >= 2 columns (use write_clustered for 1)")
-    k = len(zorder_by)
-    if bits * k > 63:
-        raise ValueError(f"bits*keys = {bits * k} exceeds the 63-bit code space")
-    span = (1 << bits) - 1
-    # Temporal keys — the canonical data-skipping columns — normalize
-    # through an epoch cast (timestamp → microseconds, date → days):
-    # min/max would otherwise collect datetime objects that float()
-    # cannot consume.
-    types = dict(df.select(*zorder_by).dtypes)
-    numeric = ("tinyint", "smallint", "int", "bigint", "float", "double")
-    key_exprs = {}
-    for c in zorder_by:
-        t = types[c]
-        if t.startswith("timestamp"):
-            key_exprs[c] = F.unix_micros(F.col(c).cast("timestamp"))
-        elif t == "date":
-            key_exprs[c] = F.datediff(F.col(c), F.lit("1970-01-01"))
-        elif t in numeric or t.startswith("decimal"):
-            key_exprs[c] = F.col(c)
-        else:
-            # fail at build time with the reason, not inside float()
-            # on a collected min/max value
-            raise ValueError(
-                f"zorder key {c!r} has unsupported type {t!r}: z-order "
-                "interleaving needs a numeric/temporal axis (map string "
-                "ids through a hash or numeric surrogate first)"
-            )
-    row = df.agg(
-        *[F.min(key_exprs[c]).alias(f"__mn_{i}") for i, c in enumerate(zorder_by)],
-        *[F.max(key_exprs[c]).alias(f"__mx_{i}") for i, c in enumerate(zorder_by)],
-    ).first()
-    scaled = []
-    for i, c in enumerate(zorder_by):
-        if row[f"__mn_{i}"] is None:
-            raise ValueError(
-                f"zorder key {c!r} has no non-NULL values to normalize "
-                "(empty input or all-NULL column)"
-            )
-        mn = float(row[f"__mn_{i}"])
-        mx = float(row[f"__mx_{i}"])
-        width = (mx - mn) or 1.0
-        scaled.append(
-            F.floor(
-                (key_exprs[c].cast("double") - F.lit(mn))
-                / F.lit(width)
-                * span
-            ).cast("long")
-        )
-    z = F.lit(0).cast("long")
-    for b in range(bits):
-        for i, s in enumerate(scaled):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(s, b).bitwiseAND(F.lit(1)), b * k + i)
-            )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def write_orc(
     df: DataFrame,
     path: str,

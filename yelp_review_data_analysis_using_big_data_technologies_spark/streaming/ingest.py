@@ -162,7 +162,6 @@ def stream_dedup_ingest_to_parquet(
     bands: int = 3,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    index_path: str | None = None,
 ) -> None:
     """Drain ``stream`` (``availableNow``) into the parquet corpus at
     ``table``, admitting per micro-batch only rows that are
@@ -179,31 +178,8 @@ def stream_dedup_ingest_to_parquet(
     present tables fail loudly instead of silently restarting the
     corpus from one batch.
 
-    ``index_path`` switches on the INDEXED mode — the shape that
-    holds at 100 TB.  Without it, every batch re-shingles and
-    re-MinHashes the ENTIRE accumulated corpus (per-batch cost grows
-    linearly with corpus size — fine for a backfill, wrong for a
-    long-lived stream).  With it, each batch appends its admitted
-    docs' dedup features (content hash, shingle set + size, band
-    keys) to a persisted side index and checks the delta against the
-    INDEX: the exact check scans one narrow hash column, band keys
-    join band keys, and only the collision candidates' shingle arrays
-    are fetched for verification — per-batch cost ∝ delta size +
-    bucket collision fan-in, independent of how big the corpus has
-    grown.  The admitted output is IDENTICAL in both modes (same
-    features, same predicates), so the SQL twin covers both.  Index
-    partitions mirror the corpus partitions (per-batch overwrite →
-    same idempotent-replay guarantee).
-
-    Mode selection (measured, scripts/measure_ingest_crossover.py at c84e9fc,
-    8-token docs / 2k-doc deltas): per-delta-batch cost crosses over
-    at a corpus of O(2×10⁴) docs — even at 20k (≈3.9 s both), indexed
-    wins 5.5→4.7 s at 100k and 14.5→4.7 s (3.1×) at 10⁶ after the r6
-    staged-admitted-ids fix removed a double execution of the verify
-    plan, with the recompute curve growing linearly in corpus size and
-    the indexed one near-flat.  Rule of thumb: backfills and small corpora →
-    recompute (no index build/write overhead); any long-lived stream
-    past ~10⁵ docs → ``index_path=``."""
+    Every batch re-shingles and re-MinHashes the accumulated corpus,
+    so per-batch cost grows linearly with corpus size."""
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -215,82 +191,25 @@ def stream_dedup_ingest_to_parquet(
             .filter(F.col("__rk") == 1)
             .drop("__rk")
         )
-        feats = None
-        if index_path is not None:
-            feats = _delta_features(
-                batch, id_col, text_col, num_hashes, bands, shingle_n
+        corpus = read_before(spark, table, batch_col, batch_id)
+        admitted = (
+            batch
+            if corpus is None
+            else dedup_against_corpus(
+                corpus.drop(batch_col),
+                batch,
+                id_col=id_col,
+                text_col=text_col,
+                num_hashes=num_hashes,
+                bands=bands,
+                shingle_n=shingle_n,
+                threshold=threshold,
             )
-            index = read_before(spark, index_path, batch_col, batch_id)
-            if index is None:
-                # Corpus-exists-but-index-missing is NOT bootstrap: a
-                # stream migrated from recompute mode has accumulated
-                # batches the new index knows nothing about — admitting
-                # against an empty index would wave duplicates through
-                # and leave the pre-switch corpus invisible to dedup
-                # FOREVER.  Backfill the index from the corpus once
-                # (features recomputed per original batch partition, so
-                # replay visibility rules keep working), then proceed.
-                prior = read_before(spark, table, batch_col, batch_id)
-                if prior is not None and prior.head(1):
-                    bf = _delta_features(
-                        prior, id_col, text_col, num_hashes, bands, shingle_n
-                    ).join(prior.select(id_col, batch_col), on=id_col)
-                    bf.write.mode("overwrite").partitionBy(
-                        batch_col
-                    ).parquet(index_path)
-                    index = read_before(spark, index_path, batch_col, batch_id)
-            if index is None:
-                admitted_ids = feats.select(id_col)
-            else:
-                exact_ok = feats.join(
-                    index.select("__sha").distinct(),
-                    on="__sha",
-                    how="left_anti",
-                ).select(id_col)
-                # candidate match through the SAME predicate builder as
-                # recompute mode (llm.dedup.match_banded_candidates) —
-                # the two modes must admit identical sets by
-                # construction, not by parallel maintenance
-                dbase, dkeys = _band_sides(feats, id_col)
-                cbase, ckeys = _band_sides(index, id_col)
-                matched = match_banded_candidates(
-                    dbase, dkeys, cbase, ckeys, id_col, threshold
-                )
-                admitted_ids = exact_ok.join(
-                    matched, on=id_col, how="left_anti"
-                )
-            # one materialization: admitted feeds BOTH the corpus write
-            # and the index-features write; unstaged, the whole
-            # index-scan + band-join + verify plan would execute twice
-            # per micro-batch
-            admitted_ids = stage(admitted_ids)
-            admitted = batch.join(admitted_ids, on=id_col, how="left_semi")
-        else:
-            corpus = read_before(spark, table, batch_col, batch_id)
-            admitted = (
-                batch
-                if corpus is None
-                else dedup_against_corpus(
-                    corpus.drop(batch_col),
-                    batch,
-                    id_col=id_col,
-                    text_col=text_col,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    shingle_n=shingle_n,
-                    threshold=threshold,
-                )
-            )
+        )
         # idempotent on replay: the batch owns its partition directory
         admitted.write.mode("overwrite").parquet(
             f"{table}/{batch_col}={batch_id}"
         )
-        if index_path is not None:
-            feats.join(
-                admitted.select(id_col), on=id_col, how="left_semi"
-            ).write.mode("overwrite").parquet(
-                f"{index_path}/{batch_col}={batch_id}"
-            )
 
     drain(stream, checkpoint, _admit)
 
@@ -565,12 +484,7 @@ def stream_line_dedup_to_parquet(
     ``sha2`` projection over the exploded kept lines (never the full
     corpus width); the batch's eligible lines anti-join that hash set
     (Zipf-hot keys → AQE skew split).  Per-batch cost grows with the
-    accumulated KEPT-line count — for a long-lived stream the same
-    persisted side-index upgrade the doc-level ingest implements
-    (``index_path``; crossover measured in
-    scripts/measure_ingest_crossover.py at c84e9fc) applies verbatim: append
-    each batch's new line hashes to an index table and anti-join
-    that instead.  Documented upgrade path, same admitted output."""
+    accumulated KEPT-line count."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:

@@ -335,45 +335,3 @@ def stream_increment_counts_to_parquet(
         write_parquet(out, path)
 
     drain(events, checkpoint, _merge)
-
-
-def stream_vectors_to_ivf_index(
-    vectors: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Run an embedding stream to completion (``availableNow``),
-    merging each micro-batch into a PERSISTED IVF index
-    (:func:`llm.vectors.add_to_ivf_index`) — continuous retrieval-index
-    maintenance: vectors land in their coarse cells as they arrive,
-    searches between batches see a consistent pruned layout, and each
-    micro-batch rewrites only the cell partitions it touches.
-
-    The index (cells + centroids) must exist — build it once with
-    :func:`llm.vectors.build_ivf_index`; an assignment against
-    centroids that do not exist yet is meaningless, so a missing index
-    raises rather than bootstrapping from one batch's vectors (whose
-    seeds would silently disagree with every later batch).
-
-    Replay safety (r12): ``add_to_ivf_index`` now UPSERTS by id —
-    existing copies of the batch's ids are replaced within the
-    touched cells (including the PRIOR cell of a re-assigned vector),
-    so replaying a batch after a crash leaves the cells bit-identical
-    and no reader-side dedup is needed.
-
-    The bootstrap-capable sibling is :func:`streaming.ingest
-    .stream_ann_index_ingest` (first non-empty batch BUILDS the
-    index, freezing its seed quantizer); this merge-only form is for
-    indexes whose quantizer was deliberately trained elsewhere."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import add_to_ivf_index
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        add_to_ivf_index(
-            batch_df, index_path, id_col=id_col, vec_col=vec_col
-        )
-
-    drain(vectors, checkpoint, _merge)

@@ -56,10 +56,8 @@ RUNNING_PROFILE_STATE = T.StructType(
 def _fold_profile(
     carry: tuple[int, float, int], batches: Iterator[pd.DataFrame]
 ) -> tuple[int, float, int]:
-    """THE accumulation rule, shared verbatim by both state APIs (the
-    module promises identical semantics for the applyInPandasWithState
-    and transformWithStateInPandas variants — one fold keeps a fix in
-    either handler from silently diverging the other)."""
+    """The accumulation rule: fold one key's micro-batch frames into
+    the carried ``(n_events, sum_value, last_ts_us)`` state."""
     n, s, last_us = carry
     for pdf in batches:
         n += len(pdf)
@@ -80,7 +78,7 @@ def _fold_profile(
 
 
 def _emit_profile(key: tuple, n: int, s: float, last_us: int) -> pd.DataFrame:
-    """The shared per-key output row (microsecond state → naive-UTC
+    """The per-key output row (microsecond state → naive-UTC
     timestamp)."""
     import datetime as _dt
 
@@ -145,66 +143,4 @@ def running_user_profile(
         stateStructType=RUNNING_PROFILE_STATE,
         outputMode="update",
         timeoutConf=timeout,
-    )
-
-
-def running_user_profile_tws(events: DataFrame) -> DataFrame:
-    """The SAME per-user running profile on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState``: a ``StatefulProcessor`` object holds
-    NAMED, schema'd state handles (here one ``ValueState``) instead of
-    a single opaque tuple, and the state store is RocksDB-backed
-    (``transformWithState`` requires the RocksDB provider; the
-    session conf is set here and applies to queries started after).
-
-    Keeping both variants is deliberate: the old API is what's
-    deployed on Spark 3.x clusters; this is the forward path — same
-    semantics, verified by the same batch-equality unit test.
-
-    Requires ``protobuf`` (transformWithState serializes state calls
-    through it); absent, this raises ImportError at build time — the
-    applyInPandasWithState twin above has no such dependency.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the protobuf package; "
-            "use running_user_profile (applyInPandasWithState) instead"
-        ) from exc
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningProfile(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "profile", RUNNING_PROFILE_STATE
-            )
-
-        def handleInputRows(
-            self, key: tuple, rows: Iterator[pd.DataFrame], timer_values
-        ) -> Iterator[pd.DataFrame]:
-            carry = (
-                self._state.get() if self._state.exists() else (0, None, None)
-            )
-            n, s, last_us = _fold_profile(carry, rows)
-            self._state.update((n, None if s is None else round(s, 6), last_us))
-            yield _emit_profile(key, n, s, last_us)
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningProfile(),
-        outputStructType=RUNNING_PROFILE_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -342,51 +342,6 @@ FROM s GROUP BY user_id, sid
 SESSIONIZE_SQL = sessionize_sql()
 
 
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "30 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Streaming deduplication with BOUNDED state:
-    ``dropDuplicatesWithinWatermark`` keeps a key in the state store
-    only until the watermark passes its event time, so state size
-    tracks the watermark horizon instead of growing forever the way
-    plain ``dropDuplicates`` state does on an unbounded stream.  The
-    operator guarantees suppression of duplicates arriving within the
-    watermark window of first sight — the right tool for at-least-once
-    sources (e.g. replayed Kafka offsets) where duplicates cluster
-    near each other in time."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
-def stream_to_parquet(
-    result: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-) -> None:
-    """Production streaming sink: parquet files + checkpointed offsets.
-
-    The checkpoint directory carries source offsets and sink commit
-    log, so re-running the SAME query (e.g. an ``availableNow``
-    backfill job on a cron) resumes where the last run stopped and
-    writes each input row exactly once — the file-sink commit protocol
-    makes partial task output invisible to readers.  This is the
-    scale-out replacement for the memory sink used in tests."""
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def drain(
     stream: DataFrame,
     checkpoint: str,
@@ -438,7 +393,8 @@ def run_available_now(
     ``availableNow`` processes everything currently in the source then
     stops — deterministic batch-replay, which is what makes the result
     oracle-checkable.  Memory sink is for tests/verification; the
-    production path is ``writers`` (parquet) with checkpointing.
+    production path is a checkpointed ``foreachBatch`` sink through
+    :func:`drain`.
     """
     q = (
         result.writeStream.format("memory")
