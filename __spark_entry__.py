@@ -23,6 +23,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relat
     duplicate_rows,
     equi_join,
     semi_join,
+    stack_legs,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans import analytics, llm_queries
@@ -242,26 +243,19 @@ def _q_set_ops_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.11 panel — unionByName + intersect + exceptAll tagged and
     stacked into one relation, so one driver-checked row hash verifies
     all three set operators."""
-    u = _q_union_all(spark, sf_dir).select(
-        F.lit("union").alias("op"), "nationkey", "side", "n"
-    )
-
-    def pad(df: DataFrame, op: str) -> DataFrame:
-        return df.select(
-            F.lit(op).alias("op"),
-            "nationkey",
-            F.lit(None).cast("string").alias("side"),
-            F.lit(None).cast("long").alias("n"),
-        )
-
-    return u.unionByName(pad(_q_intersect(spark, sf_dir), "intersect")).unionByName(
-        pad(_q_except_all(spark, sf_dir), "except_all")
+    return stack_legs(
+        {
+            "union": _q_union_all(spark, sf_dir),
+            "intersect": _q_intersect(spark, sf_dir),
+            "except_all": _q_except_all(spark, sf_dir),
+        },
+        ["nationkey", "side", "n"],
     )
 
 
 def _q_join_variants_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.4 panel — semi, anti, and left-outer-with-zero-matches over
-    the same customer⇄orders relationship, tagged and unioned.  The
+    the same customer⇄orders relationship, tagged and stacked.  The
     anti and left-outer-zero branches must agree (both are 'customers
     without orders'), and the semi branch is their complement — one
     driver row verifies the three join variants and their mutual
@@ -270,20 +264,20 @@ def _q_join_variants_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "c_custkey"
     )
     customer = load_table(spark, sf_dir, "customer")
-    s = semi_join(customer, orders, on="c_custkey").select(
-        F.lit("semi").alias("op"), "c_custkey", "c_mktsegment"
-    )
-    a = anti_join(customer, orders, on="c_custkey").select(
-        F.lit("anti").alias("op"), "c_custkey", "c_mktsegment"
-    )
     lo = (
         customer.join(orders, on="c_custkey", how="left")
         .groupBy("c_custkey", "c_mktsegment")
         .agg(F.count("o_orderkey").alias("__n"))
         .filter(F.col("__n") == 0)
-        .select(F.lit("left_outer_zero").alias("op"), "c_custkey", "c_mktsegment")
     )
-    return s.unionByName(a).unionByName(lo)
+    return stack_legs(
+        {
+            "semi": _q_join_semi(spark, sf_dir),
+            "anti": _q_join_anti(spark, sf_dir),
+            "left_outer_zero": lo,
+        },
+        ["c_custkey", "c_mktsegment"],
+    )
 
 
 def _q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,38 +709,52 @@ def _drift_sides(spark: SparkSession, sf_dir: str):
 
 def _q_events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index of event values, second half of the
-    month vs the first (operators/drift.py::psi_profile) — the
+    month vs the first (operators/drift.py::psi_profile_frozen over
+    psi_freeze_reference, the streaming PSI monitor's path) — the
     model-monitoring standard: equi-depth buckets frozen on the
     REFERENCE snapshot's quantiles, smoothed share ratio per bucket,
     decimal-summed total repeated on every row."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import psi_profile
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+        psi_freeze_reference,
+        psi_profile_frozen,
+    )
 
     ref, cur = _drift_sides(spark, sf_dir)
-    return psi_profile(ref, cur, value_col="value", buckets=10)
+    frozen = psi_freeze_reference(ref, value_col="value", buckets=10)
+    return psi_profile_frozen(cur, frozen, value_col="value")
 
 
 def _q_events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic between the two
-    half-month value distributions (operators/drift.py::ks_2sample) —
+    half-month value distributions (operators/drift.py::ks_2sample over
+    the reference's ks_side_counts, the streaming KS monitor's path) —
     the distribution-free drift test.  The CDF gap is maximised with
     the two-level prefix sum (no global value sort) and the argmax
     compares integer cross-products, so the winning value is exact in
     both engines."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import ks_2sample
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+        ks_2sample,
+        ks_side_counts,
+    )
 
     a, b = _drift_sides(spark, sf_dir)
-    return ks_2sample(a, b, value_col="value")
+    return ks_2sample(ks_side_counts(a, "value"), b, value_col="value")
 
 
 def _q_events_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson χ² categorical drift of the event-type mix, second
-    half-month vs first (operators/drift.py::chi2_drift): per-category
-    contingency contributions plus the decimal-summed total and
-    degrees of freedom on every row."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import chi2_drift
+    half-month vs first (operators/drift.py::chi2_drift_frozen over
+    chi2_freeze_reference, the streaming χ² monitor's path):
+    per-category contingency contributions plus the decimal-summed
+    total and degrees of freedom on every row."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+        chi2_drift_frozen,
+        chi2_freeze_reference,
+    )
 
     ref, cur = _drift_sides(spark, sf_dir)
-    return chi2_drift(ref, cur, cat_col="event_type")
+    frozen = chi2_freeze_reference(ref, cat_col="event_type")
+    return chi2_drift_frozen(cur, frozen, cat_col="event_type")
 
 
 def _q_events_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1227,33 +1235,16 @@ def _q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_stream_windows_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.10 panel — tumbling (1h) and sliding (1h/30m) streaming
-    window counts in ONE driver row, each run to completion with
-    availableNow into a memory sink and tagged with a ``shape``
-    column.  Packing both window shapes into one entry keeps them
-    inside the driver's 50-row correctness window while freeing slots
-    for the stream-stream join and KMeans-IVF entries (the single
-    tumbling/sliding twins stay registered past the cap for the local
-    replica and bench)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming import (
-        run_available_now,
-        stream_events,
-        tumbling_counts,
-    )
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import sliding_counts
-
-    tumb = run_available_now(
-        tumbling_counts(stream_events(spark, sf_dir), window="1 hour"),
-        "stream_windows_tumbling_sink",
-        "complete",
-    ).withColumn("shape", F.lit("tumbling"))
-    slide = run_available_now(
-        sliding_counts(
-            stream_events(spark, sf_dir), window="1 hour", slide="30 minutes"
-        ),
-        "stream_windows_sliding_sink",
-        "complete",
-    ).withColumn("shape", F.lit("sliding"))
+    """§2.10 panel — the tumbling (1h) and sliding (1h/30m) streaming
+    window counts of ``stream_tumbling_counts`` and
+    ``stream_sliding_counts`` in ONE driver row, tagged with a
+    ``shape`` column.  Packing both window shapes into one entry keeps
+    them inside the driver's 50-row correctness window while freeing
+    slots for the stream-stream join and KMeans-IVF entries (the
+    single tumbling/sliding entries stay registered past the cap for
+    the local replica and bench)."""
+    tumb = _q_stream_tumbling(spark, sf_dir).withColumn("shape", F.lit("tumbling"))
+    slide = _q_stream_sliding(spark, sf_dir).withColumn("shape", F.lit("sliding"))
     return tumb.unionByName(slide)
 
 
@@ -1338,24 +1329,21 @@ def _q_stream_joins_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Timestamps ride as ``unix_micros`` so Spark and DuckDB compare
     exact integers instead of engine-formatted strings."""
     j = _q_stream_stream_join(spark, sf_dir).select(
-        F.lit("interval_join").alias("op"),
         F.col("user_id").cast("long").alias("user_id"),
         F.col("c_event_id").cast("string").alias("k"),
         F.unix_micros("l_ts").alias("t1_us"),
         F.unix_micros("r_ts").alias("t2_us"),
         F.col("p_value").cast("double").alias("v1"),
-        F.lit(None).cast("double").alias("v2"),
     )
     e = _q_stream_static_enrich(spark, sf_dir).select(
-        F.lit("static_enrich").alias("op"),
-        F.lit(None).cast("long").alias("user_id"),
         F.concat_ws("|", "c_mktsegment", "event_type").alias("k"),
-        F.lit(None).cast("long").alias("t1_us"),
-        F.lit(None).cast("long").alias("t2_us"),
         F.col("n_events").cast("double").alias("v1"),
         F.col("sum_value").cast("double").alias("v2"),
     )
-    return j.unionByName(e)
+    return stack_legs(
+        {"interval_join": j, "static_enrich": e},
+        ["user_id", "k", "t1_us", "t2_us", "v1", "v2"],
+    )
 
 
 #: Micro-batch id boundaries for the streaming dedup ingest — batch 0
@@ -1480,13 +1468,6 @@ def _q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "dedup_ingest", sf_dir, _id_waves(docs, "doc_id", _INGEST_SPLITS)
     )
     table = os.path.join(base, "corpus")
-    # recompute mode — the BACKFILL shape this entry actually is
-    # (three waves of one static corpus, delta ≫ accumulated corpus);
-    # measured 5.0 s vs 8.9-9.9 s for the indexed mode at sf0.1, where
-    # the index's admitted-features write dominates.  The indexed mode
-    # (index_path=...) is the long-lived-stream shape (corpus ≫ delta)
-    # — admitted set proven identical by the parametrized test in
-    # tests/test_streaming.py and this same oracle.
     stream_dedup_ingest_to_parquet(stream, table, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(table)
@@ -1905,53 +1886,30 @@ def _q_events_analytics_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the single-operator twins stay registered past the cap; the
     ``n`` slot is "the entry's natural BIGINT" (users, rows, or the
     interpolation row's user_id) and v1-v3 carry the doubles."""
-    nl = F.lit(None).cast("long")
-    nd = F.lit(None).cast("double")
     fun = _q_funnel_steps(spark, sf_dir).select(
-        F.lit("funnel").alias("op"),
         F.col("step").alias("key"),
-        nl.alias("t_us"),
         F.col("n_users").cast("long").alias("n"),
-        nd.alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
     )
     coh = _q_cohort_retention(spark, sf_dir).select(
-        F.lit("cohort").alias("op"),
         F.concat_ws(
             "|",
             F.col("cohort_d").cast("string"),
             F.col("day_offset").cast("string"),
         ).alias("key"),
-        nl.alias("t_us"),
         F.col("n_users").cast("long").alias("n"),
-        nd.alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
     )
     trn = _q_transition_matrix(spark, sf_dir).select(
-        F.lit("transition").alias("op"),
         F.concat_ws(">", "prev_type", "curr_type").alias("key"),
-        nl.alias("t_us"),
         F.col("n").cast("long").alias("n"),
         F.col("p").cast("double").alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
     )
     hist = _q_value_histogram(spark, sf_dir).select(
-        F.lit("histogram").alias("op"),
         F.concat_ws(
             "|", "event_type", F.col("bucket").cast("string")
         ).alias("key"),
-        nl.alias("t_us"),
         F.col("n").cast("long").alias("n"),
-        nd.alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
     )
     gap = _q_events_gapfill(spark, sf_dir).select(
-        F.lit("gapfill").alias("op"),
-        F.lit(None).cast("string").alias("key"),
         F.unix_micros(F.col("h").cast("timestamp")).alias("t_us"),
         F.col("n").cast("long").alias("n"),
         F.col("sum_value").cast("double").alias("v1"),
@@ -1959,20 +1917,21 @@ def _q_events_analytics_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cum_n").cast("double").alias("v3"),
     )
     itp = _q_interpolate_join(spark, sf_dir).select(
-        F.lit("interpolate").alias("op"),
         F.col("event_id").cast("string").alias("key"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("t_us"),
         F.col("user_id").cast("long").alias("n"),
         F.col("interp_value").cast("double").alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
     )
-    return (
-        fun.unionByName(coh)
-        .unionByName(trn)
-        .unionByName(hist)
-        .unionByName(gap)
-        .unionByName(itp)
+    return stack_legs(
+        {
+            "funnel": fun,
+            "cohort": coh,
+            "transition": trn,
+            "histogram": hist,
+            "gapfill": gap,
+            "interpolate": itp,
+        },
+        ["key", "t_us", "n", "v1", "v2", "v3"],
     )
 
 
@@ -1981,9 +1940,7 @@ def _q_doc_text_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     heuristic language-ID confusion counts, and the top-10 document-
     frequency shingles, normalized to ``(op, key, n, v1-v4)`` under
     one driver hash (the singles stay registered past the window)."""
-    nd = F.lit(None).cast("double")
     stats = llm_queries.doc_text_stats(spark, sf_dir).select(
-        F.lit("text_stats").alias("op"),
         F.col("lang").alias("key"),
         F.col("n_docs").cast("long").alias("n"),
         F.col("avg_tokens").cast("double").alias("v1"),
@@ -1992,24 +1949,17 @@ def _q_doc_text_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("avg_stopword_ratio").cast("double").alias("v4"),
     )
     lid = llm_queries.doc_lang_id(spark, sf_dir).select(
-        F.lit("lang_id").alias("op"),
         F.concat_ws("|", "lang", "lang_pred").alias("key"),
         F.col("n").cast("long").alias("n"),
-        nd.alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
-        nd.alias("v4"),
     )
     sh = _q_shingle_explode(spark, sf_dir).select(
-        F.lit("shingle_top10").alias("op"),
         F.col("shingle").alias("key"),
         F.col("n").cast("long").alias("n"),
-        nd.alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
-        nd.alias("v4"),
     )
-    return stats.unionByName(lid).unionByName(sh)
+    return stack_legs(
+        {"text_stats": stats, "lang_id": lid, "shingle_top10": sh},
+        ["key", "n", "v1", "v2", "v3", "v4"],
+    )
 
 
 def _q_value_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2037,27 +1987,25 @@ def _q_dashboard_metrics_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per status, normalized to ``(op, key, v1, v2, v3)`` so one driver
     hash verifies all three dashboard aggregates."""
     eng = analytics.engagement_by_category(spark, sf_dir).select(
-        F.lit("engagement").alias("op"),
         F.col("l_returnflag").alias("key"),
         F.col("engagement").alias("v1"),
         F.col("avg_qty").alias("v2"),
         F.col("n").cast("double").alias("v3"),
     )
     top = analytics.top_nations_by_customers(spark, sf_dir).select(
-        F.lit("top_nations").alias("op"),
         F.col("n_name").alias("key"),
         F.col("n_customers").cast("double").alias("v1"),
-        F.lit(None).cast("double").alias("v2"),
-        F.lit(None).cast("double").alias("v3"),
     )
     qs = _q_quantiles(spark, sf_dir).select(
-        F.lit("price_quantiles").alias("op"),
         F.col("o_orderstatus").alias("key"),
         F.col("q25").alias("v1"),
         F.col("q50").alias("v2"),
         F.col("q75").alias("v3"),
     )
-    return eng.unionByName(top).unionByName(qs)
+    return stack_legs(
+        {"engagement": eng, "top_nations": top, "price_quantiles": qs},
+        ["key", "v1", "v2", "v3"],
+    )
 
 
 def _q_json_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3363,7 +3311,7 @@ ORACLES: dict[str, str] = {
     # matches nothing, operators/asof.py): DuckDB's native ASOF
     # instead hands a NULL left ts the GREATEST right point (it sorts
     # NULL past the series) — caught by the null-injection pass.
-    # The GROUP BY user_id, ts mirrors the operator's dedup_right
+    # The GROUP BY user_id, ts mirrors the operator's duplicate-right
     # contract (duplicate (by, on) quotes collapse to the greatest
     # payload): DuckDB's native ASOF picks an ARBITRARY row among
     # same-instant quotes — caught by the r9 boundary-ties probe.

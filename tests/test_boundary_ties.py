@@ -15,7 +15,7 @@ event ids.
 The exploration run (scripts/probe_boundary_ties.py at c84e9fc) found ONE real
 defect: ``events_asof_join`` diverged under same-instant duplicate
 quotes — the Spark operator collapses duplicate (by, on) right rows
-to the greatest payload (its documented ``dedup_right`` contract),
+to the greatest payload (its documented duplicate-right contract),
 but the oracle fed RAW duplicates to DuckDB's native ASOF, which
 picks an arbitrary one.  Fix: the twin now mirrors the dedup
 (GROUP BY user_id, ts → max(value)) — pinned here along with the

@@ -13,8 +13,6 @@ scripts/probe_cdc_replay.py at c84e9fc.
 
 from __future__ import annotations
 
-import datetime as dt
-
 import pytest
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (

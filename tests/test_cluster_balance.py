@@ -2,8 +2,6 @@
 embedding clusters, and the optional balance="cluster" freeze stage.
 """
 
-from pyspark.sql import functions as F
-
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.sampling import cluster_balance_sample
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans import llm_queries as lq

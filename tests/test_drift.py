@@ -1,7 +1,9 @@
 """Drift-monitor suite (operators/drift.py): PSI, exact two-sample
-KS, and χ² category drift — semantics pinned on hand-computable
-fixtures, the KS two-level decomposition proven against the naive
-single-window formulation, and the dirty-data contract (NULL/NaN/Inf
+KS, and χ² category drift, each through its one Spark path (freeze or
+count the reference side, then score the current side — the path the
+batch entries and the streaming monitors share) — semantics pinned
+on hand-computable fixtures, the KS two-level decomposition proven
+against the naive single-window formulation, and the dirty-data contract (NULL/NaN/Inf
 values, empty sides, constant distributions, one-sided categories)
 exercised the way the injection waves exercise the older families.
 """
@@ -13,9 +15,12 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
-    chi2_drift,
+    chi2_drift_frozen,
+    chi2_freeze_reference,
     ks_2sample,
-    psi_profile,
+    ks_side_counts,
+    psi_freeze_reference,
+    psi_profile_frozen,
 )
 
 NAN = float("nan")
@@ -26,12 +31,24 @@ def _vals(spark, xs):
     return spark.createDataFrame([(float(x),) for x in xs], "value double")
 
 
+def _psi(ref, cur, buckets=10):
+    return psi_profile_frozen(cur, psi_freeze_reference(ref, buckets=buckets))
+
+
+def _ks(a, b, buckets=32):
+    return ks_2sample(ks_side_counts(a), b, buckets=buckets)
+
+
+def _chi2(ref, cur):
+    return chi2_drift_frozen(cur, chi2_freeze_reference(ref))
+
+
 # ---------------------------------------------------------------- PSI
 
 
 def test_psi_identical_distributions_near_zero(spark):
     ref = _vals(spark, range(100))
-    rows = psi_profile(ref, _vals(spark, range(100)), buckets=4).collect()
+    rows = _psi(ref, _vals(spark, range(100)), buckets=4).collect()
     assert [r.bucket for r in rows] == [1, 2, 3, 4]
     # identical sides: shares equal per bucket -> every term is 0
     for r in rows:
@@ -43,7 +60,7 @@ def test_psi_identical_distributions_near_zero(spark):
 def test_psi_shifted_distribution_flags(spark):
     ref = _vals(spark, range(100))
     cur = _vals(spark, range(80, 180))  # mass moved to the top bucket
-    rows = psi_profile(ref, cur, buckets=4).collect()
+    rows = _psi(ref, cur, buckets=4).collect()
     total = rows[0].psi_total
     assert total > 0.2  # conventional "major shift" alarm
     by_bucket = {r.bucket: r for r in rows}
@@ -55,7 +72,7 @@ def test_psi_shifted_distribution_flags(spark):
 def test_psi_smoothing_keeps_one_sided_buckets_finite(spark):
     ref = _vals(spark, range(10))
     cur = _vals(spark, [100.0] * 5)  # all current mass beyond ref max
-    rows = psi_profile(ref, cur, buckets=2).collect()
+    rows = _psi(ref, cur, buckets=2).collect()
     for r in rows:
         assert r.psi_term is not None and math.isfinite(r.psi_term)
         assert math.isfinite(r.psi_total)
@@ -66,7 +83,7 @@ def test_psi_drops_nonfinite_values(spark):
     cur = spark.createDataFrame(
         [(0.5,), (None,), (NAN,), (7.0,)], "value double"
     )
-    rows = psi_profile(ref, cur, buckets=2).collect()
+    rows = _psi(ref, cur, buckets=2).collect()
     assert sum(r.ref_n for r in rows) == 8
     assert sum(r.cur_n for r in rows) == 2
 
@@ -75,7 +92,7 @@ def test_psi_constant_reference_collapses_deterministically(spark):
     # all edges equal -> comparison sum sends every row to bucket 1
     ref = _vals(spark, [5.0] * 20)
     cur = _vals(spark, [5.0] * 10 + [9.0] * 10)
-    rows = psi_profile(ref, cur, buckets=4).collect()
+    rows = _psi(ref, cur, buckets=4).collect()
     # 5.0 > 5.0 fails every comparison -> bucket 1; 9.0 clears all
     # three duplicate edges -> bucket 4.  The FULL spine is emitted:
     # buckets 2/3 are empty on both sides yet still present (with
@@ -96,7 +113,7 @@ def test_psi_empty_bucket_term_counts_when_sizes_differ(spark):
     # spine must include it or psi_total underreports
     ref = _vals(spark, [5.0] * 30)
     cur = _vals(spark, [9.0] * 10)
-    rows = psi_profile(ref, cur, buckets=4).collect()
+    rows = _psi(ref, cur, buckets=4).collect()
     assert [r.bucket for r in rows] == [1, 2, 3, 4]
     empty = [r for r in rows if r.ref_n == 0 and r.cur_n == 0]
     assert len(empty) == 2
@@ -105,9 +122,21 @@ def test_psi_empty_bucket_term_counts_when_sizes_differ(spark):
     assert abs(sum(r.psi_term for r in rows) - total) < 1e-5
 
 
+def test_psi_empty_current_scores_full_spine(spark):
+    # an empty current side still scores every reference bucket:
+    # cur_n is 0 throughout, ref_n carries the frozen counts
+    ref = _vals(spark, range(10))
+    cur = _vals(spark, []).where(F.lit(False))
+    rows = _psi(ref, cur, buckets=4).collect()
+    assert [r.bucket for r in rows] == [1, 2, 3, 4]
+    assert all(r.cur_n == 0 for r in rows)
+    assert sum(r.ref_n for r in rows) == 10
+    assert all(math.isfinite(r.psi_term) for r in rows)
+
+
 def test_psi_rejects_degenerate_buckets(spark):
     with pytest.raises(ValueError):
-        psi_profile(_vals(spark, [1.0]), _vals(spark, [1.0]), buckets=1)
+        _psi(_vals(spark, [1.0]), _vals(spark, [1.0]), buckets=1)
 
 
 # ----------------------------------------------------------------- KS
@@ -115,13 +144,13 @@ def test_psi_rejects_degenerate_buckets(spark):
 
 def test_ks_identical_samples_zero(spark):
     a = _vals(spark, range(50))
-    row = ks_2sample(a, _vals(spark, range(50))).collect()[0]
+    row = _ks(a, _vals(spark, range(50))).collect()[0]
     assert row.ks_stat == 0.0
     assert row.n_a == 50 and row.n_b == 50
 
 
 def test_ks_disjoint_samples_one(spark):
-    row = ks_2sample(
+    row = _ks(
         _vals(spark, range(10)), _vals(spark, range(100, 110))
     ).collect()[0]
     assert row.ks_stat == 1.0
@@ -131,7 +160,7 @@ def test_ks_disjoint_samples_one(spark):
 def test_ks_hand_computed(spark):
     # F_a jumps 1/2 at 1 and 3; F_b jumps 1/2 at 2 and 4:
     # gaps at 1,2,3,4 are 1/2, 0, 1/2, 0 -> D = 0.5, first at v=1
-    row = ks_2sample(_vals(spark, [1, 3]), _vals(spark, [2, 4])).collect()[0]
+    row = _ks(_vals(spark, [1, 3]), _vals(spark, [2, 4])).collect()[0]
     assert row.ks_stat == 0.5
     assert row.ks_at == 1.0
 
@@ -141,7 +170,7 @@ def test_ks_two_level_equals_naive_window(spark):
     # decomposition must equal the naive global-window CDF exactly
     a = _vals(spark, [i % 17 for i in range(500)])
     b = _vals(spark, [(i % 23) + 3 for i in range(400)])
-    row = ks_2sample(a, b, buckets=8).collect()[0]
+    row = _ks(a, b, buckets=8).collect()[0]
 
     counts = (
         a.select(F.col("value").alias("v"), F.lit(1).alias("ca"), F.lit(0).alias("cb"))
@@ -168,7 +197,7 @@ def test_ks_two_level_equals_naive_window(spark):
 
 def test_ks_empty_side_yields_null_stat(spark):
     empty = _vals(spark, []).where(F.lit(False))
-    row = ks_2sample(_vals(spark, [1.0, 2.0]), empty).collect()[0]
+    row = _ks(_vals(spark, [1.0, 2.0]), empty).collect()[0]
     assert row.ks_stat is None
     assert row.n_b == 0
 
@@ -176,7 +205,7 @@ def test_ks_empty_side_yields_null_stat(spark):
 def test_ks_nonfinite_values_drop(spark):
     a = _vals(spark, [1.0, 2.0, NAN, INF])
     b = spark.createDataFrame([(1.0,), (None,), (2.0,)], "value double")
-    row = ks_2sample(a, b).collect()[0]
+    row = _ks(a, b).collect()[0]
     assert row.n_a == 2 and row.n_b == 2
     assert row.ks_stat == 0.0
 
@@ -193,7 +222,7 @@ def _cats(spark, pairs):
 def test_chi2_identical_mix_zero(spark):
     ref = _cats(spark, [("a", 30), ("b", 20)])
     cur = _cats(spark, [("a", 60), ("b", 40)])  # same proportions, 2x size
-    rows = chi2_drift(ref, cur).collect()
+    rows = _chi2(ref, cur).collect()
     assert all(r.contrib == 0.0 for r in rows)
     assert rows[0].chi2_total == 0.0
     assert rows[0].dof == 1
@@ -205,7 +234,7 @@ def test_chi2_hand_computed_2x2(spark):
     # chi2 = 4 * (2.5^2/12.5 + 2.5^2/7.5)/... compute directly:
     ref = _cats(spark, [("a", 10), ("b", 10)])
     cur = _cats(spark, [("a", 15), ("b", 5)])
-    rows = {r.category: r for r in chi2_drift(ref, cur).collect()}
+    rows = {r.category: r for r in _chi2(ref, cur).collect()}
     ea = 25 * 20 / 40.0  # row_n * side_n / N
     expect_a = (10 - ea) ** 2 / ea + (15 - ea) ** 2 / ea
     assert rows["a"].contrib == round(expect_a, 6)
@@ -220,7 +249,7 @@ def test_chi2_hand_computed_2x2(spark):
 def test_chi2_category_in_one_side_only(spark):
     ref = _cats(spark, [("a", 10)])
     cur = _cats(spark, [("a", 5), ("new", 5)])
-    rows = {r.category: r for r in chi2_drift(ref, cur).collect()}
+    rows = {r.category: r for r in _chi2(ref, cur).collect()}
     assert "new" in rows
     assert rows["new"].ref_n == 0 and rows["new"].cur_n == 5
     assert rows["new"].contrib > 0
@@ -232,7 +261,7 @@ def test_chi2_null_categories_drop(spark):
         [("a",), (None,), ("a",)], "event_type string"
     )
     cur = _cats(spark, [("a", 2)])
-    rows = chi2_drift(ref, cur).collect()
+    rows = _chi2(ref, cur).collect()
     assert len(rows) == 1
     assert rows[0].ref_n == 2 and rows[0].cur_n == 2
 
@@ -240,57 +269,8 @@ def test_chi2_null_categories_drop(spark):
 def test_chi2_empty_current_guarded(spark):
     ref = _cats(spark, [("a", 4), ("b", 6)])
     cur = _cats(spark, []).where(F.lit(False))
-    rows = chi2_drift(ref, cur).collect()
+    rows = _chi2(ref, cur).collect()
     # e_cur = 0 for every category -> guarded to 0; e_ref = row total
     for r in rows:
         assert r.cur_n == 0
         assert math.isfinite(r.contrib)
-
-
-def test_psi_frozen_path_identical_to_live(spark):
-    """psi_profile_frozen (one reference scan for the whole monitor
-    run) must reproduce psi_profile(ref, cur) bit-for-bit — same
-    edges, same spine, same smoothed terms — including on an empty
-    current side and on tie-degenerate references."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
-        psi_freeze_reference,
-        psi_profile_frozen,
-    )
-
-    cases = [
-        (list(range(100)), [x * 1.5 + 3 for x in range(40)]),
-        ([5.0] * 30, [9.0] * 10),  # duplicate-edge collapse
-        (list(range(10)), []),  # empty batch
-    ]
-    for ref_vals, cur_vals in cases:
-        ref = _vals(spark, ref_vals)
-        cur = _vals(spark, cur_vals)
-        if not cur_vals:
-            cur = cur.where("value IS NOT NULL")
-        frozen = psi_freeze_reference(ref, buckets=4)
-        got = psi_profile_frozen(cur, frozen).collect()
-        want = psi_profile(ref, cur, buckets=4).collect()
-        assert got == want, (ref_vals[:3], cur_vals[:3])
-
-
-def test_chi2_frozen_path_identical_to_live(spark):
-    """chi2_drift_frozen must reproduce chi2_drift bit-for-bit,
-    including batch-only and reference-only categories and an empty
-    batch (all-zero cur_n over the reference's category set)."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
-        chi2_drift_frozen,
-        chi2_freeze_reference,
-    )
-
-    ref = _cats(spark, [("a", 30), ("b", 20), ("only_ref", 4)])
-    cases = [
-        _cats(spark, [("a", 10), ("b", 40), ("only_cur", 6)]),
-        _cats(spark, [("a", 1)]),
-        _cats(spark, [("z", 5)]),
-        _cats(spark, []).where("event_type IS NOT NULL"),
-    ]
-    frozen = chi2_freeze_reference(ref)
-    for cur in cases:
-        got = chi2_drift_frozen(cur, frozen).collect()
-        want = chi2_drift(ref, cur).collect()
-        assert got == want

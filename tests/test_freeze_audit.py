@@ -8,8 +8,6 @@ bucket (drops + kept partition the table).
 
 import os
 
-from pyspark.sql import functions as F
-
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans import llm_queries as lq
 

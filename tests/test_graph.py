@@ -119,8 +119,6 @@ def test_twin_matches_brute_force():
 
 
 def test_validation():
-    import pyspark.sql.functions as F  # noqa: F401
-
     with pytest.raises(ValueError, match="iterations"):
         pagerank(None, iterations=0)
     with pytest.raises(ValueError, match="damping"):

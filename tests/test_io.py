@@ -8,10 +8,56 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table, read_csv, read_json
-from yelp_review_data_analysis_using_big_data_technologies_spark.sources.schemas import REVIEW_SCHEMA, YELP_SCHEMAS
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_csv, write_parquet
+
+#: Explicit schemas for the Yelp-shaped JSON inputs of the reference's
+#: staging step — what ``spark.read.json`` inference would produce
+#: (FIXTURES.md §A), declared so the read is single-pass.  Only the
+#: kept columns plus the raw extras the reference renames; the nested
+#: ``attributes``/``hours`` structs are dropped (SURVEY.md §1).
+BUSINESS_SCHEMA = T.StructType(
+    [
+        T.StructField("business_id", T.StringType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("stars", T.DoubleType()),
+        T.StructField("review_count", T.LongType()),
+        T.StructField("city", T.StringType()),
+        T.StructField("state", T.StringType()),
+        T.StructField("categories", T.StringType()),
+    ]
+)
+REVIEW_SCHEMA = T.StructType(
+    [
+        T.StructField("review_id", T.StringType()),
+        T.StructField("user_id", T.StringType()),
+        T.StructField("business_id", T.StringType()),
+        T.StructField("stars", T.DoubleType()),
+        T.StructField("useful", T.LongType()),
+        T.StructField("funny", T.LongType()),
+        T.StructField("cool", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("date", T.StringType()),
+    ]
+)
+USER_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.StringType()),
+        T.StructField("name", T.StringType()),
+        T.StructField("review_count", T.LongType()),
+        T.StructField("fans", T.LongType()),
+        T.StructField("useful", T.LongType()),
+        T.StructField("funny", T.LongType()),
+        T.StructField("cool", T.LongType()),
+    ]
+)
+YELP_SCHEMAS = {
+    "business": BUSINESS_SCHEMA,
+    "review": REVIEW_SCHEMA,
+    "user": USER_SCHEMA,
+}
 
 
 def _rows(df):

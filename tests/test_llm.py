@@ -6,11 +6,31 @@ the sf0.001 fixture.
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import dedup as ldd
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import multimodal as lmm
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import text as ltx
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
+
+#: Typed metadata carried beside every media blob.
+MEDIA_META_SCHEMA = T.StructType(
+    [
+        T.StructField("media_type", T.StringType()),  # image | audio | video
+        T.StructField("format", T.StringType()),  # png, wav, mp4, ...
+        T.StructField("source_uri", T.StringType()),
+    ]
+)
+
+#: Canonical multimodal record the multimodal operators read: id +
+#: opaque payload + metadata.
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType()),
+        T.StructField("meta", MEDIA_META_SCHEMA),
+    ]
+)
 
 
 @pytest.fixture(scope="module")
@@ -579,7 +599,7 @@ class TestMultimodal:
     def test_fake_decode_is_deterministic_and_typed(self, spark):
         media = spark.createDataFrame(
             [(1, bytearray(b"abc"), ("image", "png", "s://x"))],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         out = lmm.extract_features(media, decode="fake").collect()
         assert len(out) == 1
@@ -589,13 +609,13 @@ class TestMultimodal:
     def test_real_decode_raises_for_codec_required_payloads(self, spark):
         media = spark.createDataFrame(
             [(1, bytearray(b"abc"), ("image", "png", "s://x"))],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         with pytest.raises(Exception, match="NotImplementedError|Pillow"):
             lmm.extract_features(media, decode="real").collect()
         audio = spark.createDataFrame(
             [(1, bytearray(b"RIFFxxxx"), ("audio", "wav", "s://x"))],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         with pytest.raises(Exception, match="NotImplementedError|codec"):
             lmm.extract_features(audio, decode="real").collect()
@@ -660,7 +680,7 @@ class TestMultimodal:
                 (1, None, ("image", "png", "s://missing")),
                 (2, bytearray(self._png(64, 32)), ("image", "png", "s://ok")),
             ],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         out = {
             r.media_id: (r.width, r.height, r.n_frames)
@@ -676,7 +696,7 @@ class TestMultimodal:
             (3, bytearray(self._bmp(1024, 768)), ("image", "bmp", "s://b")),
             (4, bytearray(self._jpeg(800, 600)), ("image", "jpeg", "s://j")),
         ]
-        media = spark.createDataFrame(rows, lmm.MEDIA_SCHEMA)
+        media = spark.createDataFrame(rows, MEDIA_SCHEMA)
         out = {
             r.media_id: (r.width, r.height, r.n_frames)
             for r in lmm.extract_features(media, decode="real").collect()
@@ -708,7 +728,7 @@ class TestMultimodal:
     def test_real_decode_wav_frame_count_through_spark(self, spark):
         media = spark.createDataFrame(
             [(1, bytearray(self._wav(n_frames=1234)), ("audio", "wav", "s://a"))],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         r = lmm.extract_features(media, decode="real").collect()[0]
         assert (r.width, r.height, r.n_frames) == (None, None, 1234)
@@ -755,7 +775,7 @@ class TestFrameSampling:
         # payload of 100 bytes -> fake n_frames = 100 % 16 + 1 = 5
         media = spark.createDataFrame(
             [(1, bytearray(b"x" * 100), ("video", "fake", "s://v"))],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         out = lmm.sample_frames(media, n_samples=4).collect()
         frames = sorted(r.frame_idx for r in out)
@@ -766,7 +786,7 @@ class TestFrameSampling:
         # 17 bytes -> n_frames = 2; 4 samples must collapse to 2 rows
         media = spark.createDataFrame(
             [(1, bytearray(b"x" * 17), ("video", "fake", "s://v"))],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         out = lmm.sample_frames(media, n_samples=4).collect()
         assert sorted(r.frame_idx for r in out) == [0, 1]
@@ -796,7 +816,7 @@ class TestImageHeaderEdgeCases:
 
         media = spark.createDataFrame(
             [(1, bytearray(b"x" * 10), ("video", "fake", "s://v"))],
-            lmm.MEDIA_SCHEMA,
+            MEDIA_SCHEMA,
         )
         with _pytest.raises(ValueError, match="n_samples"):
             lmm.sample_frames(media, n_samples=0)
@@ -876,7 +896,7 @@ class TestMediaIntegrityAudit:
     """Magic-byte format audit + exact payload dedup (r10)."""
 
     def _audit(self, spark, rows):
-        media = spark.createDataFrame(rows, lmm.MEDIA_SCHEMA)
+        media = spark.createDataFrame(rows, MEDIA_SCHEMA)
         return {
             r.media_id: r for r in lmm.media_integrity_audit(media).collect()
         }

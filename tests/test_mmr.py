@@ -98,8 +98,6 @@ def test_mmr_candidates_generic_id_types(spark):
     STRING doc ids and a string query id must round-trip losslessly
     through the literal picks relation — the old hardcoded-bigint
     schema made createDataFrame fail here."""
-    from pyspark.sql import functions as F
-
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import mmr_rerank_candidates
 
     emb = spark.createDataFrame(

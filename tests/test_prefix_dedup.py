@@ -5,8 +5,6 @@ from __future__ import annotations
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import prefix_contained

@@ -2,7 +2,6 @@
 Gopher-style repetition metrics, and PII redaction."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import decontam as ldec
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import quality as lq

@@ -1,10 +1,13 @@
 """Reachability guard (a plain AST scan, no Spark): every module-level
-``def`` / ``class`` in the package must be reachable from code that
-is not a test — the entry module, ``bench.py``, ``scripts/``,
-``perfbench/`` or the package's own module-level statements (imports
-and re-exports included) — through a chain of identifier references.
-A function only a test calls is dead weight: delete it with its
-tests, or wire it to an entry.
+``def`` / ``class`` and every module-level constant (a plain
+``NAME = ...`` assignment; dunders like ``__all__`` excepted) in the
+package must be reachable from code that is not a test — the entry
+module, ``bench.py``, ``scripts/``, ``perfbench/`` or the package's
+own module-level statements (imports and re-exports included) —
+through a chain of identifier references.
+A function or constant only a test reads is dead weight: delete it
+with its tests (or move a constant into the test that reads it), or
+wire it to an entry.
 
 Reachability is a fixpoint over names: a package definition is live
 once a live context mentions its name as an identifier (``Name``,
@@ -57,6 +60,24 @@ def _identifiers(node):
             yield n.name.rsplit(".", 1)[-1]
 
 
+def _defined_names(node):
+    """Names a module-level statement defines: a ``def``/``class``, or
+    the plain-name targets of an assignment (``X = ...``,
+    ``X: T = ...``) other than dunders."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = [t.id for t in targets if isinstance(t, ast.Name)]
+    if len(names) != len(targets) or any(n.startswith("__") for n in names):
+        return []
+    return names
+
+
 def _unreachable():
     """Sorted ``path::name`` of every package definition no chain of
     references from non-test code reaches."""
@@ -65,12 +86,12 @@ def _unreachable():
         with open(os.path.join(ROOT, path)) as f:
             tree = ast.parse(f.read())
         for node in tree.body:
-            if path.startswith(PKG + os.sep) and isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                defs[(path, node.name)] = set(_identifiers(node)) - {node.name}
-            else:
+            names = _defined_names(node) if path.startswith(PKG + os.sep) else []
+            if not names:
                 live.update(_identifiers(node))
+            for name in names:
+                refs = set(_identifiers(node)) - {name}
+                defs[(path, name)] = defs.get((path, name), set()) | refs
     while True:
         reached = [k for k in defs if k[1] in live]
         if not reached:

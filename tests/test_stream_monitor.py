@@ -8,7 +8,10 @@ import os
 
 from pyspark.sql import functions as F
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import psi_profile
+from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+    psi_freeze_reference,
+    psi_profile_frozen,
+)
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_psi_monitor
 
 
@@ -76,7 +79,7 @@ def test_stream_batch_equals_batch_operator(spark, tmp_path):
         .collect()
     )
     want = (
-        psi_profile(ref, batch)
+        psi_profile_frozen(batch, psi_freeze_reference(ref))
         .select("bucket", "ref_n", "cur_n", "psi_term", "psi_total")
         .collect()
     )
@@ -115,7 +118,10 @@ def test_stream_empty_batch_scored_full_spine(spark, tmp_path):
 
 
 def test_stream_ks_batch_equals_batch_operator(spark, tmp_path):
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import ks_2sample
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+        ks_2sample,
+        ks_side_counts,
+    )
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_ks_monitor
 
     ref = _vals(spark, range(100))
@@ -134,7 +140,7 @@ def test_stream_ks_batch_equals_batch_operator(spark, tmp_path):
         .select("ks_stat", "ks_at", "n_a", "n_b")
         .collect()
     )
-    want = ks_2sample(ref, batch).collect()
+    want = ks_2sample(ks_side_counts(ref), batch).collect()
     assert got == want
     assert got[0].n_a == 100 and got[0].n_b == 100
     # CDFs: ref uniform on [0,100), batch on [50,150) -> max gap 0.5
@@ -173,7 +179,10 @@ def test_stream_ks_replay_overwrites_not_duplicates(spark, tmp_path):
 
 
 def test_stream_chi2_batch_equals_batch_operator(spark, tmp_path):
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import chi2_drift
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+        chi2_drift_frozen,
+        chi2_freeze_reference,
+    )
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import stream_chi2_monitor
 
     ref = _cats(spark, [("a", 30), ("b", 20)])
@@ -194,7 +203,7 @@ def test_stream_chi2_batch_equals_batch_operator(spark, tmp_path):
         .collect()
     )
     want = (
-        chi2_drift(ref, batch)
+        chi2_drift_frozen(batch, chi2_freeze_reference(ref))
         .select("category", "ref_n", "cur_n", "contrib", "chi2_total", "dof")
         .collect()
     )

@@ -36,10 +36,10 @@ sampling operators.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import WS, tokens
+from .text import tokens
 
 __all__ = [
     "bpe_encode_stats",

@@ -313,8 +313,9 @@ def match_banded_candidates(
 ) -> DataFrame:
     """Delta ids with ≥1 corpus candidate (shared band key) verifying
     at Jaccard ≥ ``threshold`` — THE matched-candidates predicate,
-    shared by :func:`dedup_against_corpus` (recompute mode) and the
-    indexed streaming ingest so the two modes cannot silently diverge.
+    shared by :func:`dedup_against_corpus` and the cross-batch check
+    of ``streaming.ingest.stream_doc_dedup_to_parquet`` so the two
+    cannot silently diverge.
     Inputs: ``dbase``/``cbase`` carry ``(__id, __sh, __sz)``,
     ``dkeys``/``ckeys`` carry ``(__id, band_key)`` exploded."""
     cands = (
@@ -778,6 +779,11 @@ def ngram_jaccard_candidate_profile(
     }
 
 
+#: Candidate cut the prefix plan must promise before
+#: :func:`ngram_jaccard_pairs_auto` picks it over the base plan.
+_PREFIX_PREFER_RATIO = 2.0
+
+
 def ngram_jaccard_pairs_auto(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -785,14 +791,14 @@ def ngram_jaccard_pairs_auto(
     shingle_n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 1000,
-    prefer_ratio: float = 2.0,
 ) -> DataFrame:
     """Regime-selected exact n-gram Jaccard pairs: tokenize ONCE
     (staged postings shared with whichever plan wins), run the
     candidate profile, and dispatch to the PPJoin prefix plan only
-    when it predicts at least a ``prefer_ratio``-fold candidate cut —
-    the margin that pays for the prefix plan's two fixed extra passes
-    (the per-doc ranking window and the candidate-verify joins).
+    when it predicts at least a ``_PREFIX_PREFER_RATIO``-fold
+    candidate cut — the margin that pays for the prefix plan's two
+    fixed extra passes (the per-doc ranking window and the
+    candidate-verify joins).
 
     Measured (scripts/measure_prefix_jaccard.py at c84e9fc, local[32]): the
     profile's predictions are EXACT — on the Zipf-ish favorable corpus
@@ -805,7 +811,7 @@ def ngram_jaccard_pairs_auto(
     dispatcher keys on it and not on a wall estimate; the sf0.1 bench
     already shows the base plan ~2× cheaper in the unfavorable regime
     (doc_ngram_jaccard_prefix 7.7–8.4 s vs the base's ~4 s).
-    ``prefer_ratio=2`` splits the measured regimes with headroom on
+    A ratio of 2 splits the measured regimes with headroom on
     both sides; the regime TEST pins the choice on both shapes
     (tests/test_prefix_jaccard.py).
 
@@ -834,7 +840,7 @@ def ngram_jaccard_pairs_auto(
     sh = _jaccard_postings(df, id_col, text_col, shingle_n)
     dfreq = stage(_retained_df(sh, max_df))
     prof = ngram_jaccard_candidate_profile(sh, dfreq, threshold)
-    use_prefix = prof["candidates_full"] > prefer_ratio * max(
+    use_prefix = prof["candidates_full"] > _PREFIX_PREFER_RATIO * max(
         prof["candidates_prefix"], 1
     )
     op = _prefix_pairs_from_postings if use_prefix else _pairs_from_postings

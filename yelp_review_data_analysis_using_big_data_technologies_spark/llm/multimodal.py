@@ -31,24 +31,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Typed metadata carried beside every media blob.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image | audio | video
-        T.StructField("format", T.StringType()),  # png, wav, mp4, ...
-        T.StructField("source_uri", T.StringType()),
-    ]
-)
-
-#: Canonical multimodal record: id + opaque payload + metadata.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", MEDIA_META_SCHEMA),
-    ]
-)
-
 #: Output of the feature-extraction pass.
 MEDIA_FEATURES_SCHEMA = T.StructType(
     [

@@ -1216,7 +1216,7 @@ def train_centroids_kmeans(
     ``(cell_id, __c)`` shape the IVF builders take.  Not
     oracle-checkable (iterative); recall is unit-tested instead."""
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     spark = embeddings.sparkSession
     feats = embeddings.select(

@@ -26,6 +26,9 @@ from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import cols_list
 
+#: Prefix of the matched right-side columns (``asof_ts``, ...).
+_MATCH_PREFIX = "asof_"
+
 
 def asof_join(
     left: DataFrame,
@@ -34,17 +37,15 @@ def asof_join(
     by: str | list[str] = "user_id",
     direction: str = "backward",
     tolerance: Column | None = None,
-    match_prefix: str = "asof_",
-    dedup_right: bool = True,
 ) -> DataFrame:
-    """As-of join ``left`` with ``right`` (see module docstring).
+    """As-of join ``left`` with ``right`` (see module docstring); the
+    match columns come back prefixed ``asof_``.
 
     ``tolerance`` — optional max time gap as a Column interval
     (e.g. ``F.expr("INTERVAL 1 HOUR")``); matches farther than it are
-    nulled out.  ``dedup_right=True`` deterministically collapses
-    duplicate (by, on) right rows (keeps the lexicographically
-    greatest payload) so the match is well-defined — drop it only
-    when the right side is known unique.
+    nulled out.  Duplicate (by, on) right rows collapse
+    deterministically (the lexicographically greatest payload wins)
+    so the match is well-defined.
     """
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
@@ -63,8 +64,7 @@ def asof_join(
             "__rp"
         ),
     )
-    if dedup_right:
-        r = r.groupBy(*by_cols, on).agg(F.max("__rp").alias("__rp"))
+    r = r.groupBy(*by_cols, on).agg(F.max("__rp").alias("__rp"))
 
     l = left.withColumn("__side", F.lit(1))
     r = r.withColumn("__side", F.lit(0))
@@ -108,6 +108,6 @@ def asof_join(
     keep = [c for c in left.columns]
     return out.select(
         *keep,
-        F.col("__m.__t").alias(f"{match_prefix}{on}"),
-        *[F.col(f"__m.{c}").alias(f"{match_prefix}{c}") for c in r_payload],
+        F.col("__m.__t").alias(f"{_MATCH_PREFIX}{on}"),
+        *[F.col(f"__m.{c}").alias(f"{_MATCH_PREFIX}{c}") for c in r_payload],
     )

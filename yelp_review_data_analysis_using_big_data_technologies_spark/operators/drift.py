@@ -3,37 +3,48 @@ against a REFERENCE snapshot (the train/serve skew and
 data-freshness checks a 100-TB training pipeline runs before every
 refresh).
 
-Three standard statistics, each with an exact DuckDB twin:
+Three standard statistics, each with an exact DuckDB twin.  Each
+has ONE Spark path, split the same way: the reference side is
+reduced once to a batch-independent state (bounded driver literals
+for PSI and χ²), and a scorer touches only the current side.  The batch entries and the streaming
+monitors (streaming/monitor.py) run the same pair, so a monitor
+scores every micro-batch exactly as the batch entry scores a
+snapshot.
 
-* :func:`psi_profile` — Population Stability Index over equi-depth
-  buckets of the reference distribution (the credit-scoring /
-  model-monitoring standard; PSI > 0.2 is the conventional "major
-  shift" alarm).
-* :func:`ks_2sample` — the exact two-sample Kolmogorov–Smirnov
-  statistic ``D = max_v |F_a(v) − F_b(v)|``, computed distributed
-  with the same two-level prefix-sum decomposition as
+* PSI — Population Stability Index over equi-depth buckets of the
+  reference distribution (the credit-scoring / model-monitoring
+  standard; PSI > 0.2 is the conventional "major shift" alarm):
+  :func:`psi_freeze_reference` → :func:`psi_profile_frozen`.
+* KS — the exact two-sample Kolmogorov–Smirnov statistic
+  ``D = max_v |F_a(v) − F_b(v)|``, computed distributed with the
+  same two-level prefix-sum decomposition as
   ``pack_bins``/``distributed_rank`` (a single global CDF window
-  would funnel every distinct value through one task).
-* :func:`chi2_drift` — Pearson χ² over the 2×C side-by-category
-  contingency table for categorical drift.
+  would funnel every distinct value through one task):
+  :func:`ks_side_counts` → :func:`ks_2sample`.
+* χ² — Pearson χ² over the 2×C side-by-category contingency table
+  for categorical drift: :func:`chi2_freeze_reference` →
+  :func:`chi2_drift_frozen`.
 
 Scale shapes:
 
 * PSI: one partial-agg pass over the reference computes all bucket
-  edges (broadcast 1-row), bucket assignment is the order-free
-  comparison sum ``1 + Σ(v > edgeᵢ)`` shared with
+  edges and a second its per-bucket counts, both collected as
+  ≤ ``2·buckets + 1`` driver literals; bucket assignment is the
+  order-free comparison sum ``1 + Σ(v > edgeᵢ)`` shared with
   ``equidepth_histogram`` (duplicate edges collapse deterministically
   in both engines), and the bucket table is ≤ ``buckets`` rows.
-* KS: per-distinct-value counts (a partial agg, smaller than the data
-  by the duplication factor) → level-1 running sums inside quantile
-  buckets (parallel over buckets) → level-2 offsets over the
-  ≤ ``buckets``-row subtotal relation (the only
-  ordered-window-over-everything, bounded like pack_bins' level 2)
-  → argmax of the INTEGER cross-product difference
-  ``|cum_a·N_b − cum_b·N_a|`` in DECIMAL(38,0)/HUGEINT, so the max
-  and its tie-break compare exactly in both engines (no float
+* KS: per-distinct-value counts of each side (a partial agg, smaller
+  than the data by the duplication factor) merged by value →
+  level-1 running sums inside quantile buckets (parallel over
+  buckets) → level-2 offsets over the ≤ ``buckets``-row subtotal
+  relation (the only ordered-window-over-everything, bounded like
+  pack_bins' level 2) → argmax of the INTEGER cross-product
+  difference ``|cum_a·N_b − cum_b·N_a|`` in DECIMAL(38,0)/HUGEINT, so
+  the max and its tie-break compare exactly in both engines (no float
   comparisons until the final division).
-* χ²: two partial aggs and a 1-row broadcast of the margins.
+* χ²: the reference's per-category counts collect as literals
+  (bounded by the category domain); the current side is one partial
+  agg, and the margins are a 1-row broadcast.
 
 Numeric contract: NULL/NaN/±Inf values drop up front (the
 ``equidepth_histogram`` contract); PSI shares are additive-smoothed
@@ -52,128 +63,14 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
 _FINITE = lambda c: c.isNotNull() & ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))  # noqa: E731
 
 
-def psi_profile(
-    ref: DataFrame,
-    cur: DataFrame,
-    value_col: str = "value",
-    buckets: int = 10,
-) -> DataFrame:
-    """PSI per reference-quantile bucket →
-    ``(bucket, lo, hi, ref_n, cur_n, ref_share, cur_share, psi_term,
-    psi_total)`` ordered by bucket.
-
-    Bucket edges are the ``i/buckets`` interpolated quantiles of the
-    REFERENCE (the PSI convention — the monitor asks "did the new
-    data leave the old data's shape", so the binning must not move
-    with the new data).  Current values outside the reference range
-    land in the outer buckets via the comparison-sum rule; ``lo``/
-    ``hi`` report the reference edges.  The FULL ``1..buckets`` spine
-    is always emitted: a bucket empty on both sides still carries its
-    smoothed term ``(0.5/(Nr+h) − 0.5/(Nc+h))·ln(...)``, which is
-    nonzero whenever ``Nr ≠ Nc`` — omitting it would silently
-    underreport ``psi_total`` vs the all-bucket PSI convention.
-    Shares are smoothed ``(n + 0.5)/(N + buckets/2)`` so one-sided and
-    empty buckets stay finite.  ``psi_total`` repeats the
-    decimal-summed total on every row."""
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
-    v = F.col(value_col)
-    r = ref.where(_FINITE(v)).select(v.alias("__v"))
-    c = cur.where(_FINITE(v)).select(v.alias("__v"))
-    qs = [i / buckets for i in range(1, buckets)]
-    stats = r.agg(
-        F.min("__v").alias("__e0"),
-        *[F.percentile("__v", F.lit(q)).alias(f"__e{i + 1}") for i, q in enumerate(qs)],
-        F.max("__v").alias(f"__e{buckets}"),
-    )
-    tagged = r.withColumn("__side", F.lit("r")).unionByName(
-        c.withColumn("__side", F.lit("c"))
-    )
-    bucket = F.lit(1)
-    for i in range(1, buckets):
-        bucket = bucket + (F.col("__v") > F.col(f"__e{i}")).cast("int")
-    lo = F.when(F.col("bucket") == 1, F.col("__e0"))
-    hi = F.when(F.col("bucket") == 1, F.col("__e1"))
-    for i in range(2, buckets + 1):
-        lo = lo.when(F.col("bucket") == i, F.col(f"__e{i - 1}"))
-        hi = hi.when(F.col("bucket") == i, F.col(f"__e{i}"))
-    counts = (
-        tagged.crossJoin(F.broadcast(stats))  # 1-row edge relation
-        .withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(
-            F.sum((F.col("__side") == "r").cast("bigint")).alias("ref_n"),
-            F.sum((F.col("__side") == "c").cast("bigint")).alias("cur_n"),
-        )
-    )
-    # full 1..buckets spine: buckets empty on BOTH sides still carry
-    # their (nonzero when Nr != Nc) smoothed term; lo/hi come off the
-    # edge relation, so empty buckets report real reference edges
-    spine = (
-        ref.sparkSession.range(1, buckets + 1)
-        .select(F.col("id").cast("int").alias("bucket"))
-        .crossJoin(F.broadcast(stats))
-    )
-    # staged: the <= buckets-row relation is referenced by both the
-    # totals agg and the final projection — without the persist the
-    # full snapshot scan runs twice
-    per_bucket = stage(
-        spine.join(counts, on="bucket", how="left").select(
-            "bucket",
-            F.round(lo, 6).alias("lo"),
-            F.round(hi, 6).alias("hi"),
-            F.coalesce("ref_n", F.lit(0).cast("bigint")).alias("ref_n"),
-            F.coalesce("cur_n", F.lit(0).cast("bigint")).alias("cur_n"),
-        )
-    )
-    return _psi_from_per_bucket(per_bucket, buckets)
-
-
-def _psi_from_per_bucket(per_bucket: DataFrame, buckets: int) -> DataFrame:
-    """Shared PSI tail: smoothed shares, per-bucket terms, and the
-    decimal-summed total over a staged ``(bucket, lo, hi, ref_n,
-    cur_n)`` spine — the same float-op order whether the reference
-    side was computed live (:func:`psi_profile`) or frozen
-    (:func:`psi_profile_frozen`), so the two paths hash identically."""
-    totals = per_bucket.agg(
-        F.sum("ref_n").alias("__nr"), F.sum("cur_n").alias("__nc")
-    )
-    half = buckets / 2.0
-    rs = (F.col("ref_n") + 0.5) / (F.col("__nr") + half)
-    cs = (F.col("cur_n") + 0.5) / (F.col("__nc") + half)
-    termed = (
-        per_bucket.crossJoin(F.broadcast(totals))  # 1-row margin relation
-        .withColumn("ref_share", F.round(rs, 6))
-        .withColumn("cur_share", F.round(cs, 6))
-        .withColumn("psi_term", F.round((rs - cs) * F.log(rs / cs), 6))
-    )
-    total = termed.agg(
-        F.sum(F.col("psi_term").cast("decimal(38,12)")).alias("__t")
-    )
-    return (
-        termed.crossJoin(F.broadcast(total))  # 1-row total relation
-        .select(
-            "bucket",
-            "lo",
-            "hi",
-            "ref_n",
-            "cur_n",
-            "ref_share",
-            "cur_share",
-            "psi_term",
-            F.round(F.col("__t").cast("double"), 6).alias("psi_total"),
-        )
-        .orderBy("bucket")
-    )
-
-
 def psi_profile_sql(
     ref_sql: str,
     cur_sql: str,
     value_col: str = "value",
     buckets: int = 10,
 ) -> str:
-    """DuckDB twin of :func:`psi_profile` — same reference-quantile
+    """DuckDB twin of :func:`psi_profile_frozen` over
+    :func:`psi_freeze_reference` — same reference-quantile
     edges (``quantile_cont`` ≡ Spark ``percentile``), same
     comparison-sum bucket rule, same smoothing, same decimal-summed
     total.  ``ref_sql``/``cur_sql`` are subqueries projecting
@@ -251,11 +148,14 @@ def psi_freeze_reference(
     (≤ ``buckets + 1`` doubles + ``buckets`` longs: the bounded
     codebook/centroid class of collect, NOT a data collect).
 
-    This is the amortization the monitors need at scale: the
-    reference snapshot is scanned ONCE, and every subsequent batch
-    score (:func:`psi_profile_frozen`) touches only the batch.  Raw
-    (unrounded) edge doubles are kept so the scorer's Spark-side
-    ``F.round`` reproduces :func:`psi_profile`'s lo/hi bit-for-bit."""
+    Bucket edges are the ``i/buckets`` interpolated quantiles of the
+    REFERENCE (the PSI convention — the monitor asks "did the new
+    data leave the old data's shape", so the binning must not move
+    with the new data).  The reference snapshot is scanned here ONCE;
+    every score (:func:`psi_profile_frozen`) touches only its current
+    side, which is what lets a monitor score each micro-batch at a
+    cost ∝ batch.  Raw (unrounded) edge doubles are kept; the scorer
+    rounds ``lo``/``hi`` in Spark."""
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
     v = F.col(value_col)
@@ -290,17 +190,22 @@ def psi_profile_frozen(
     frozen: dict,
     value_col: str = "value",
 ) -> DataFrame:
-    """:func:`psi_profile` with the reference side FROZEN
-    (:func:`psi_freeze_reference`): buckets the CURRENT sample against
-    literal edges and joins literal reference counts onto the full
-    spine — one scan of ``cur``, zero scans of the reference.  Output
-    is identical to ``psi_profile(ref, cur)`` by construction (same
-    bucket rule, same spine, and the shared
-    :func:`_psi_from_per_bucket` tail keeps the float-op order), so
-    the streaming monitor's frozen path hashes against the same twin
-    — pinned in tests/test_drift.py."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
+    """PSI of ``cur`` against a frozen reference
+    (:func:`psi_freeze_reference`) per reference-quantile bucket →
+    ``(bucket, lo, hi, ref_n, cur_n, ref_share, cur_share, psi_term,
+    psi_total)`` ordered by bucket.  One scan of ``cur``, zero scans
+    of the reference.
 
+    Current values outside the reference range land in the outer
+    buckets via the comparison-sum rule; ``lo``/``hi`` report the
+    reference edges.  The FULL ``1..buckets`` spine is always
+    emitted: a bucket empty on both sides still carries its smoothed
+    term ``(0.5/(Nr+h) − 0.5/(Nc+h))·ln(...)``, which is nonzero
+    whenever ``Nr ≠ Nc`` — omitting it would silently underreport
+    ``psi_total`` vs the all-bucket PSI convention.  Shares are
+    smoothed ``(n + 0.5)/(N + buckets/2)`` so one-sided and empty
+    buckets stay finite.  ``psi_total`` repeats the decimal-summed
+    total on every row."""
     buckets = int(frozen["buckets"])
     edges = frozen["edges"]
     ref_counts = frozen["ref_counts"]
@@ -325,6 +230,9 @@ def psi_profile_frozen(
     spine = cur.sparkSession.range(1, buckets + 1).select(
         F.col("id").cast("int").alias("bucket")
     )
+    # staged: the <= buckets-row relation is referenced by both the
+    # totals agg and the final projection — without the persist the
+    # current-side scan runs twice
     per_bucket = stage(
         spine.join(counts, on="bucket", how="left").select(
             "bucket",
@@ -334,19 +242,45 @@ def psi_profile_frozen(
             F.coalesce("cur_n", F.lit(0).cast("bigint")).alias("cur_n"),
         )
     )
-    return _psi_from_per_bucket(per_bucket, buckets)
+    totals = per_bucket.agg(
+        F.sum("ref_n").alias("__nr"), F.sum("cur_n").alias("__nc")
+    )
+    half = buckets / 2.0
+    rs = (F.col("ref_n") + 0.5) / (F.col("__nr") + half)
+    cs = (F.col("cur_n") + 0.5) / (F.col("__nc") + half)
+    termed = (
+        per_bucket.crossJoin(F.broadcast(totals))  # 1-row margin relation
+        .withColumn("ref_share", F.round(rs, 6))
+        .withColumn("cur_share", F.round(cs, 6))
+        .withColumn("psi_term", F.round((rs - cs) * F.log(rs / cs), 6))
+    )
+    total = termed.agg(
+        F.sum(F.col("psi_term").cast("decimal(38,12)")).alias("__t")
+    )
+    return (
+        termed.crossJoin(F.broadcast(total))  # 1-row total relation
+        .select(
+            "bucket",
+            "lo",
+            "hi",
+            "ref_n",
+            "cur_n",
+            "ref_share",
+            "cur_share",
+            "psi_term",
+            F.round(F.col("__t").cast("double"), 6).alias("psi_total"),
+        )
+        .orderBy("bucket")
+    )
 
 
 def ks_side_counts(
     df: DataFrame, value_col: str = "value", out_col: str = "__an"
 ) -> DataFrame:
     """Per-distinct-value counts of one KS side ``(__v, out_col)`` —
-    the batch-independent state a streaming monitor precomputes for
-    its frozen reference (r15 opt): :func:`ks_2sample` accepts it via
-    ``a_counts`` and merges the other side's counts by value, which
-    yields the SAME integer count rows the two-sided union+aggregate
-    produced (integer sums are associative), so every downstream
-    number — edges sketch, CDF, statistic — is bitwise unchanged."""
+    the reference-side state :func:`ks_2sample` takes.  A streaming
+    monitor computes it once per run; the batch entry computes it
+    for its one snapshot."""
     v = F.col(value_col)
     return (
         df.where(_FINITE(v))
@@ -356,16 +290,16 @@ def ks_side_counts(
 
 
 def ks_2sample(
-    a: DataFrame,
+    a_counts: DataFrame,
     b: DataFrame,
     value_col: str = "value",
     buckets: int = 32,
-    a_counts: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact two-sample KS statistic → ONE row
-    ``(ks_stat, ks_at, n_a, n_b)``: the max CDF gap, the smallest
-    value attaining it (exact integer tie-break), and the two sample
-    sizes.
+    """Exact two-sample KS statistic between the reference side
+    ``a`` — given as its :func:`ks_side_counts` — and the sample
+    ``b`` → ONE row ``(ks_stat, ks_at, n_a, n_b)``: the max CDF gap,
+    the smallest value attaining it (exact integer tie-break), and
+    the two sample sizes.
 
     ``F_side(v)`` is the empirical CDF evaluated at every observed
     distinct value of EITHER sample; the gap is maximised there (the
@@ -376,41 +310,23 @@ def ks_2sample(
     sides yield a NULL statistic rather than a division by zero."""
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
-    v = F.col(value_col)
-    # staged: the distinct-value relation feeds the edge sketch, the
-    # bucketed CDF, and (via per_bucket) the totals — unstaged, the
-    # full two-sided scan would run once per consumer
-    if a_counts is None:
-        counts = stage(
-            a.where(_FINITE(v))
-            .select(v.alias("__v"), F.lit(1).alias("__a"), F.lit(0).alias("__b"))
-            .unionByName(
-                b.where(_FINITE(v)).select(
-                    v.alias("__v"), F.lit(0).alias("__a"), F.lit(1).alias("__b")
-                )
-            )
-            .groupBy("__v")
-            .agg(F.sum("__a").alias("__an"), F.sum("__b").alias("__bn"))
+    # b's counts merge with the reference counts by value: full-outer
+    # + coalesce(0) gives the integer rows a union+aggregate of both
+    # raw sides would.  Staged: the distinct-value relation feeds the
+    # edge sketch, the bucketed CDF, and (via per_bucket) the totals —
+    # unstaged, b's scan would run once per consumer
+    zero = F.lit(0).cast("bigint")
+    counts = stage(
+        a_counts.join(
+            ks_side_counts(b, value_col, out_col="__bn"),
+            on="__v",
+            how="full",
+        ).select(
+            "__v",
+            F.coalesce(F.col("__an"), zero).alias("__an"),
+            F.coalesce(F.col("__bn"), zero).alias("__bn"),
         )
-    else:
-        # merge the PRECOMPUTED a-side counts with this b's counts by
-        # value (r15 opt — the streaming monitor's per-batch shape:
-        # the frozen reference aggregates once per RUN, not per batch;
-        # per-batch cost is the batch's own aggregate + a join against
-        # the cached reference counts).  Full-outer + coalesce(0)
-        # reproduces the union+aggregate's integer rows exactly.
-        zero = F.lit(0).cast("bigint")
-        counts = stage(
-            a_counts.join(
-                ks_side_counts(b, value_col, out_col="__bn"),
-                on="__v",
-                how="full",
-            ).select(
-                "__v",
-                F.coalesce(F.col("__an"), zero).alias("__an"),
-                F.coalesce(F.col("__bn"), zero).alias("__bn"),
-            )
-        )
+    )
     # Bucket edges only BALANCE the level-1 windows — the statistic is
     # edge-independent (any monotone partition of the value axis gives
     # the same cumulative counts), so the cheap approx_percentile
@@ -490,8 +406,9 @@ def ks_2sample_sql(
     b_sql: str,
     value_col: str = "value",
 ) -> str:
-    """DuckDB twin of :func:`ks_2sample` — the NAIVE single-window
-    CDF formulation the two-level decomposition must equal (HUGEINT
+    """DuckDB twin of :func:`ks_2sample` over both raw sides — the
+    NAIVE single-window CDF formulation the two-level decomposition
+    must equal (HUGEINT
     cross-products play the DECIMAL(38,0) role)."""
     return f"""
 WITH counts AS (
@@ -522,42 +439,64 @@ GROUP BY n_a, n_b
 """
 
 
-def chi2_drift(
-    ref: DataFrame,
+def chi2_freeze_reference(ref: DataFrame, cat_col: str = "event_type") -> dict:
+    """Collect the reference's per-category counts as driver-side
+    literals (bounded by the CATEGORY DOMAIN — the codebook class of
+    collect), so the reference snapshot is scanned once and every
+    score (:func:`chi2_drift_frozen`) touches only its current side.
+    NULL categories drop (they are a data-quality finding, not a drift
+    signal)."""
+    cc = F.col(cat_col)
+    rows = (
+        ref.where(cc.isNotNull())
+        .groupBy(cc.alias("category"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("ref_n"))
+        .collect()
+    )
+    cat_type = dict(ref.select(cc.alias("category")).dtypes)["category"]
+    return {
+        "ref_counts": [(r["category"], int(r["ref_n"])) for r in rows],
+        "cat_type": cat_type,
+    }
+
+
+def chi2_drift_frozen(
     cur: DataFrame,
+    frozen: dict,
     cat_col: str = "event_type",
 ) -> DataFrame:
-    """Pearson χ² over the 2×C (side × category) contingency table →
-    ``(category, ref_n, cur_n, contrib, chi2_total, dof)`` ordered by
-    category.
+    """Pearson χ² of ``cur`` against a frozen reference
+    (:func:`chi2_freeze_reference`) over the 2×C (side × category)
+    contingency table → ``(category, ref_n, cur_n, contrib,
+    chi2_total, dof)`` ordered by category.
 
-    ``contrib`` is the category's two-cell term
+    One scan of ``cur``; the frozen counts re-enter as a literal
+    relation, and a full-outer category join builds the contingency
+    table (a category seen on one side only gets a zero count on the
+    other).  ``contrib`` is the category's two-cell term
     ``Σ_side (o − e)² / e`` with the usual margin-product expectation
     ``e = rowN · sideN / N``; ``chi2_total`` (decimal-summed rounded
     terms) and ``dof = C − 1`` repeat on every row.  NULL categories
-    drop (they are a data-quality finding, not a drift signal); an
-    empty side contributes zero-expectation cells guarded to 0."""
+    drop; an empty side contributes zero-expectation cells guarded
+    to 0."""
+    spark = cur.sparkSession
+    ref_lit = spark.createDataFrame(
+        frozen["ref_counts"],
+        f"category {frozen['cat_type']}, ref_n bigint",
+    )
     cc = F.col(cat_col)
-    tagged = (
-        ref.where(cc.isNotNull())
-        .select(cc.alias("category"), F.lit(1).alias("__r"), F.lit(0).alias("__c"))
-        .unionByName(
-            cur.where(cc.isNotNull()).select(
-                cc.alias("category"), F.lit(0).alias("__r"), F.lit(1).alias("__c")
-            )
+    cur_counts = (
+        cur.where(cc.isNotNull())
+        .groupBy(cc.alias("category"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cur_n"))
+    )
+    per_cat = (
+        ref_lit.join(cur_counts, on="category", how="full_outer").select(
+            "category",
+            F.coalesce("ref_n", F.lit(0).cast("bigint")).alias("ref_n"),
+            F.coalesce("cur_n", F.lit(0).cast("bigint")).alias("cur_n"),
         )
     )
-    per_cat = tagged.groupBy("category").agg(
-        F.sum("__r").alias("ref_n"), F.sum("__c").alias("cur_n")
-    )
-    return _chi2_from_per_cat(per_cat)
-
-
-def _chi2_from_per_cat(per_cat: DataFrame) -> DataFrame:
-    """Shared χ² tail over a ``(category, ref_n, cur_n)`` contingency
-    relation — identical float-op order for the live
-    (:func:`chi2_drift`) and frozen (:func:`chi2_drift_frozen`)
-    reference paths."""
     margins = per_cat.agg(
         F.sum("ref_n").alias("__mr"),
         F.sum("cur_n").alias("__mc"),
@@ -595,66 +534,13 @@ def _chi2_from_per_cat(per_cat: DataFrame) -> DataFrame:
     )
 
 
-def chi2_freeze_reference(ref: DataFrame, cat_col: str = "event_type") -> dict:
-    """Collect the reference's per-category counts as driver-side
-    literals (bounded by the CATEGORY DOMAIN — the codebook class of
-    collect) so a streaming monitor scans the reference snapshot once,
-    not once per micro-batch (the PSI-monitor amortization applied to
-    the χ² leg)."""
-    cc = F.col(cat_col)
-    rows = (
-        ref.where(cc.isNotNull())
-        .groupBy(cc.alias("category"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("ref_n"))
-        .collect()
-    )
-    cat_type = dict(ref.select(cc.alias("category")).dtypes)["category"]
-    return {
-        "ref_counts": [(r["category"], int(r["ref_n"])) for r in rows],
-        "cat_type": cat_type,
-    }
-
-
-def chi2_drift_frozen(
-    cur: DataFrame,
-    frozen: dict,
-    cat_col: str = "event_type",
-) -> DataFrame:
-    """:func:`chi2_drift` with the reference side FROZEN
-    (:func:`chi2_freeze_reference`): one scan of ``cur``, the frozen
-    counts re-enter as a literal relation, and a full-outer category
-    join reproduces the live union-aggregate contingency exactly
-    (categories on either side only surface with a zero count on the
-    other).  Shares :func:`_chi2_from_per_cat`, so output is
-    bit-identical to ``chi2_drift(ref, cur)`` — pinned in
-    tests/test_drift.py."""
-    spark = cur.sparkSession
-    ref_lit = spark.createDataFrame(
-        frozen["ref_counts"],
-        f"category {frozen['cat_type']}, ref_n bigint",
-    )
-    cc = F.col(cat_col)
-    cur_counts = (
-        cur.where(cc.isNotNull())
-        .groupBy(cc.alias("category"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cur_n"))
-    )
-    per_cat = (
-        ref_lit.join(cur_counts, on="category", how="full_outer").select(
-            "category",
-            F.coalesce("ref_n", F.lit(0).cast("bigint")).alias("ref_n"),
-            F.coalesce("cur_n", F.lit(0).cast("bigint")).alias("cur_n"),
-        )
-    )
-    return _chi2_from_per_cat(per_cat)
-
-
 def chi2_drift_sql(
     ref_sql: str,
     cur_sql: str,
     cat_col: str = "event_type",
 ) -> str:
-    """DuckDB twin of :func:`chi2_drift` — same margins, same
+    """DuckDB twin of :func:`chi2_drift_frozen` over
+    :func:`chi2_freeze_reference` — same margins, same
     zero-expectation guard, same decimal-summed total."""
     return f"""
 WITH tagged AS (

@@ -51,6 +51,19 @@ def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> Dat
     return equi_join(left, right, on, how="left_anti")
 
 
+def stack_legs(legs: Mapping[str, DataFrame], columns: Sequence[str]) -> DataFrame:
+    """§2.11 panel stacking — tag each leg with its ``op`` key and
+    union them by name into ``(op, *columns)``.  A leg without one of
+    ``columns`` gets NULLs of the type another leg gives it
+    (``allowMissingColumns``), so legs project only the columns they
+    fill; the final ``select`` pins the column order."""
+    tagged = [df.withColumn("op", F.lit(op)) for op, df in legs.items()]
+    out = tagged[0]
+    for leg in tagged[1:]:
+        out = out.unionByName(leg, allowMissingColumns=True)
+    return out.select("op", *columns)
+
+
 def dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     """F3 — ``dropDuplicates`` (reference scripts/etl.py:56 does the
     full-row form, which shuffles every column).  Prefer ``subset`` on

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.functions.dateparts import day_name
-from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import equi_join
+from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import equi_join, stack_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
 
 
@@ -248,7 +248,7 @@ def dashboard_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def slicer_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 panel — ROLLUP, CUBE, and explicit GROUPING SETS over the
-    same (flag, status) slicers, tagged and unioned into one relation.
+    same (flag, status) slicers, tagged and stacked into one relation.
     All three compile to a single expand+partial-agg pass each; the
     panel verifies the three grouping-analytics paths in one
     driver-checked result."""
@@ -260,27 +260,17 @@ def slicer_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
         ]
 
-    r = lineitem.rollup("l_returnflag", "l_linestatus").agg(*aggs())
-    c = lineitem.cube("l_returnflag", "l_linestatus").agg(*aggs())
-    g = lineitem.groupingSets(
-        [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
-        "l_returnflag",
-        "l_linestatus",
-    ).agg(*aggs())
-
-    def tag(df: DataFrame, op: str) -> DataFrame:
-        return df.select(
-            F.lit(op).alias("op"),
-            "l_returnflag",
-            "l_linestatus",
-            "n",
-            "sum_price",
-        )
-
-    return (
-        tag(r, "rollup")
-        .unionByName(tag(c, "cube"))
-        .unionByName(tag(g, "grouping_sets"))
+    return stack_legs(
+        {
+            "rollup": lineitem.rollup("l_returnflag", "l_linestatus").agg(*aggs()),
+            "cube": lineitem.cube("l_returnflag", "l_linestatus").agg(*aggs()),
+            "grouping_sets": lineitem.groupingSets(
+                [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
+                "l_returnflag",
+                "l_linestatus",
+            ).agg(*aggs()),
+        },
+        ["l_returnflag", "l_linestatus", "n", "sum_price"],
     )
 
 

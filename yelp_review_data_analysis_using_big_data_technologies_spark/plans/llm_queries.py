@@ -10,6 +10,8 @@ the one rows-only entry: its hash family is Spark-internal.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -37,6 +39,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.graph
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import (
     dedup_keyed_deterministic,
+    stack_legs,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table, scratch_dir
 
@@ -1216,53 +1219,23 @@ def pipeline_split_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections/filters; (c) pays one stratum-key shuffle for the
     exact count — all three reproducible at any scale, no rand()."""
     docs = load_table(spark, sf_dir, "documents")
-    split_rows = (
-        lsmp.split_assign(docs)
-        .groupBy("split")
-        .agg(
+
+    def per_group(df: DataFrame, key: str) -> DataFrame:
+        return df.groupBy(F.col(key).alias("grp")).agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(_sane_chars()).alias("sum_chars"),
         )
-        .select(
-            F.lit("split").alias("op"),
-            F.col("split").alias("grp"),
-            "n_docs",
-            "sum_chars",
-        )
-    )
-    strat_rows = (
-        lsmp.stratified_sample(docs, "lang", STRAT_FRACTIONS)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(_sane_chars()).alias("sum_chars"),
-        )
-        .select(
-            F.lit("stratified").alias("op"),
-            F.col("lang").alias("grp"),
-            "n_docs",
-            "sum_chars",
-        )
-    )
-    take_rows = (
-        lsmp.take_per_stratum(docs, "lang", k=_TAKE_K)
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(_sane_chars()).alias("sum_chars"),
-        )
-        .select(
-            F.lit("take").alias("op"),
-            F.col("lang").alias("grp"),
-            "n_docs",
-            "sum_chars",
-        )
-    )
-    return (
-        split_rows.unionByName(strat_rows)
-        .unionByName(take_rows)
-        .orderBy("op", "grp")
-    )
+
+    return stack_legs(
+        {
+            "split": per_group(lsmp.split_assign(docs), "split"),
+            "stratified": per_group(
+                lsmp.stratified_sample(docs, "lang", STRAT_FRACTIONS), "lang"
+            ),
+            "take": per_group(lsmp.take_per_stratum(docs, "lang", k=_TAKE_K), "lang"),
+        },
+        ["grp", "n_docs", "sum_chars"],
+    ).orderBy("op", "grp")
 
 
 def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1795,31 +1768,28 @@ _RECALL_PROBES = (1, 2, 4, 8)
 _RECALL_PLANES = (4, 6, 8)
 
 
-def vec_ann_recall_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured recall@k-vs-dial curve — the dial a 100-TB ANN
-    operator otherwise tunes blind (r10 verdict #7): for each IVF
-    ``n_probe`` in {1,2,4,8} (and the sign-LSH point at its frozen
-    plane count), the fraction of exact bruteforce top-k rows the ANN
-    variant reproduces → ``(method, dial, matched, truth, recall)``.
-    ``n_probe = n_cells`` probes every cell, so the curve must END at
-    recall 1.0 (pinned, with monotonicity, in tests/test_llm.py).
-    All legs are deterministic (seeded centroids, frozen planes), so
-    the whole curve has a DuckDB twin — no rows-only concession."""
-    emb = _load_embeddings(spark, sf_dir)
-    q = _query_set(emb)
+def _recall_curve(
+    emb: DataFrame, q: DataFrame, legs: Iterable[tuple[str, int, DataFrame]]
+) -> DataFrame:
+    """Stack one recall leg per ``(method, dial, ann)`` of ``legs`` →
+    ``(method, dial, matched, truth, recall)`` ordered by method and
+    dial: the fraction of the exact bruteforce top-k rows of ``q``
+    over ``emb`` that each ANN result reproduces.  ``legs`` is read
+    after the truth set is staged and filled, so a generator defers
+    the ANN construction until then."""
     bf = lstg.stage(
         lvec.top_k_bruteforce(emb, q, k=_TOP_K).select("query_id", "vec_id")
     )
     # eager fill (r15 opt): bf feeds the 1-row truth broadcast AND one
-    # join side of every recall leg — seven references in the final
-    # unioned query plus a broadcast build that races them; an
+    # join side of every recall leg — one reference per leg in the
+    # final unioned query plus a broadcast build that races them; an
     # unfilled lazy cache re-ran the bruteforce per reference (the
     # freeze-manifest finding)
     bf.count()
     truth = F.broadcast(bf.agg(F.count(F.lit(1)).alias("truth")))
-
-    def _leg(ann: DataFrame, method: str, dial: int) -> DataFrame:
-        return (
+    out = None
+    for method, dial, ann in legs:
+        leg = (
             ann.select("query_id", "vec_id")
             .join(bf, on=["query_id", "vec_id"])
             .agg(F.count(F.lit(1)).alias("matched"))
@@ -1832,34 +1802,42 @@ def vec_ann_recall_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.col("matched") / F.col("truth"), 6).alias("recall"),
             )
         )
+        out = leg if out is None else out.unionByName(leg)
+    return out.orderBy("method", "dial")
 
-    # all four n_probe dials from ONE corpus assignment + scoring pass
-    # (lvec.top_k_ann_ivf_multidial, r15 opt — row-identical to four
-    # independent top_k_ann_ivf calls; the twin is unchanged)
-    legs = [
-        _leg(ann, "ivf_n_probe", p)
+
+def vec_ann_recall_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Measured recall@k-vs-dial curve — the dial a 100-TB ANN
+    operator otherwise tunes blind (r10 verdict #7): for each IVF
+    ``n_probe`` in {1,2,4,8} (and the sign-LSH point at its frozen
+    plane count), the fraction of exact bruteforce top-k rows the ANN
+    variant reproduces → ``(method, dial, matched, truth, recall)``.
+    ``n_probe = n_cells`` probes every cell, so the curve must END at
+    recall 1.0 (pinned, with monotonicity, in tests/test_llm.py).
+    All legs are deterministic (seeded centroids, frozen planes), so
+    the whole curve has a DuckDB twin — no rows-only concession."""
+    emb = _load_embeddings(spark, sf_dir)
+    q = _query_set(emb)
+
+    def legs():
+        # all four n_probe dials from ONE corpus assignment + scoring
+        # pass (lvec.top_k_ann_ivf_multidial, r15 opt — row-identical
+        # to four independent top_k_ann_ivf calls; the twin is
+        # unchanged)
         for p, ann in lvec.top_k_ann_ivf_multidial(
             emb, q, k=_TOP_K, n_cells=_IVF_CELLS, probes=_RECALL_PROBES
-        )
-    ]
-    # sign-LSH dial: FEWER planes = coarser buckets = more candidates
-    # (an n-plane bucket refines every prefix bucket), so recall is
-    # monotone NONINCREASING in plane count — the mirror dial of
-    # n_probe, pinned in the same test
-    legs.extend(
-        _leg(
-            lvec.top_k_ann_signlsh(
+        ):
+            yield "ivf_n_probe", p, ann
+        # sign-LSH dial: FEWER planes = coarser buckets = more
+        # candidates (an n-plane bucket refines every prefix bucket),
+        # so recall is monotone NONINCREASING in plane count — the
+        # mirror dial of n_probe, pinned in the same test
+        for n in _RECALL_PLANES:
+            yield "signlsh_n_planes", n, lvec.top_k_ann_signlsh(
                 emb, q, k=_TOP_K, planes=lvec.PLANE_POOL[:n]
-            ),
-            "signlsh_n_planes",
-            n,
-        )
-        for n in _RECALL_PLANES
-    )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out.orderBy("method", "dial")
+            )
+
+    return _recall_curve(emb, q, legs())
 
 
 _PQ_RECALL_RERANK = (1, 2, 4)
@@ -1895,33 +1873,11 @@ def vec_ann_recall_profile_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load_embeddings(spark, sf_dir)
     q = _query_set(emb)
     cents, books = lvec.train_ivfpq_params(emb, n_cells=_IVF_CELLS)
-    bf = lstg.stage(
-        lvec.top_k_bruteforce(emb, q, k=_TOP_K).select("query_id", "vec_id")
-    )
-    # eager fill — same multi-reference shape as vec_ann_recall_profile
-    bf.count()
-    truth = F.broadcast(bf.agg(F.count(F.lit(1)).alias("truth")))
 
-    def _leg(ann: DataFrame, method: str, dial: int) -> DataFrame:
-        return (
-            ann.select("query_id", "vec_id")
-            .join(bf, on=["query_id", "vec_id"])
-            .agg(F.count(F.lit(1)).alias("matched"))
-            .crossJoin(truth)  # 1-row totals relation
-            .select(
-                F.lit(method).alias("method"),
-                F.lit(dial).cast("int").alias("dial"),
-                "matched",
-                "truth",
-                F.round(F.col("matched") / F.col("truth"), 6).alias("recall"),
-            )
-        )
-
-    # all rerank dials from ONE encode + ADC + widest-cut exact-re-rank
-    # pass (lvec.top_k_ann_ivfpq_multirerank, r15 opt — row-identical
-    # to the independent per-dial calls)
-    legs = [
-        _leg(ann, "ivfpq_rerank", r)
+    def legs():
+        # all rerank dials from ONE encode + ADC + widest-cut
+        # exact-re-rank pass (lvec.top_k_ann_ivfpq_multirerank, r15
+        # opt — row-identical to the independent per-dial calls)
         for r, ann in lvec.top_k_ann_ivfpq_multirerank(
             emb,
             q,
@@ -1931,28 +1887,20 @@ def vec_ann_recall_profile_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_probe=_IVF_PROBE,
             centroids=cents,
             codebooks=books,
+        ):
+            yield "ivfpq_rerank", r, ann
+        yield "ivfpq_exhaustive", _IVF_CELLS, lvec.top_k_ann_ivfpq(
+            emb,
+            q,
+            k=_TOP_K,
+            n_cells=_IVF_CELLS,
+            n_probe=_IVF_CELLS,
+            rerank=1 << 30,
+            centroids=cents,
+            codebooks=books,
         )
-    ]
-    legs.append(
-        _leg(
-            lvec.top_k_ann_ivfpq(
-                emb,
-                q,
-                k=_TOP_K,
-                n_cells=_IVF_CELLS,
-                n_probe=_IVF_CELLS,
-                rerank=1 << 30,
-                centroids=cents,
-                codebooks=books,
-            ),
-            "ivfpq_exhaustive",
-            _IVF_CELLS,
-        )
-    )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out.orderBy("method", "dial")
+
+    return _recall_curve(emb, q, legs())
 
 
 def vec_top_k_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:

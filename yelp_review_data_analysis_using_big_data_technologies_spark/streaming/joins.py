@@ -68,10 +68,8 @@ def stream_static_enrich(
     stream: DataFrame,
     dim: DataFrame,
     on,
-    how: str = "inner",
-    hint_broadcast: bool = True,
 ) -> DataFrame:
-    """Stream-static join: enrich a live stream against a BATCH
+    """Stream-static inner join: enrich a live stream against a BATCH
     dimension table.  No state is buffered for the static side — it is
     re-executed per micro-batch — and with the broadcast hint every
     executor joins map-side with zero stream-side shuffle: the right
@@ -85,8 +83,7 @@ def stream_static_enrich(
     the next micro-batch's tasks).  To follow a refreshing dimension,
     re-create the dim frame per batch inside ``foreachBatch``, or use
     a catalog/table format whose snapshots refresh."""
-    d = F.broadcast(dim) if hint_broadcast else dim
-    return stream.join(d, on=on, how=how)
+    return stream.join(F.broadcast(dim), on=on, how="inner")
 
 
 def _is_missing_table(exc) -> bool:

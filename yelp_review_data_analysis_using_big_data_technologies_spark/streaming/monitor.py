@@ -6,26 +6,27 @@ circuit breaker) watches the drift trajectory as data arrives — the
 "alert me when the new day's distribution leaves the training
 snapshot's shape" loop every feature store runs.
 
-Shape per micro-batch: the reference's bucket edges are computed
-ONCE up front (a 1-row relation the monitor reuses — frozen edges are
-the PSI convention AND what makes per-batch profiles comparable to
-each other), so each batch costs one tagged-union aggregate over
-``reference ∪ batch``.  Replay safety: results write via dynamic
-partition overwrite of the batch's OWN ``ingest_batch`` partition
-(the ingest.py idiom) — a replayed batch id overwrites itself instead
-of duplicating rows.
+Shape per micro-batch: each monitor runs the batch statistic's one
+Spark path (operators/drift.py) — the reference side is reduced ONCE
+per run to a batch-independent state, and each micro-batch score
+touches only the batch, so per-batch cost is ∝ batch:
 
-At 100 TB the reference side of the union is the dominant cost, so
-the PSI monitor FREEZES it (r11): ``psi_freeze_reference`` scans the
-snapshot once up front (edges + per-bucket counts, a bounded
-driver-side literal), and each micro-batch score
-(``psi_profile_frozen``) touches only the batch — per-batch cost is
-∝ batch, with output bit-identical to the live two-sided
-``psi_profile`` (pinned in tests/test_drift.py), so the streaming
-rows still hash against the exact batch twin.  The KS monitor keeps
-the two-sided form (its reference state is the full distinct-value
-CDF, not a bounded sketch) but stages the reference ONCE across the
-run instead of rescanning it per batch.
+* PSI: ``psi_freeze_reference`` collects the reference's bucket edges
+  and per-bucket counts as bounded driver literals (frozen edges are
+  the PSI convention AND what makes per-batch profiles comparable to
+  each other); ``psi_profile_frozen`` scores the batch.
+* χ²: ``chi2_freeze_reference`` collects the per-category counts
+  (bounded by the category domain); ``chi2_drift_frozen`` scores.
+* KS: the reference's per-distinct-value counts
+  (``ks_side_counts``) are not a bounded sketch, so they stay in
+  Spark — staged once for the run and merged by value with each
+  batch's own counts in ``ks_2sample``.
+
+The batch drift entries run the same pairs, so the streaming rows
+hash against the exact batch twins.  Replay safety: results write
+via dynamic partition overwrite of the batch's OWN ``ingest_batch``
+partition (the ingest.py idiom) — a replayed batch id overwrites
+itself instead of duplicating rows.
 """
 
 from __future__ import annotations
@@ -108,7 +109,7 @@ def stream_psi_monitor(
 ) -> None:
     """Drain ``stream`` (``availableNow``) scoring each micro-batch's
     ``value_col`` distribution against ``reference`` with
-    :func:`~...operators.drift.psi_profile`; per-batch profiles land
+    :func:`~...operators.drift.psi_profile_frozen`; per-batch profiles land
     partitioned by ``ingest_batch`` at ``out_path``.  An empty
     micro-batch scores as an all-zero ``cur_n`` column over the full
     bucket spine."""
@@ -141,31 +142,28 @@ def stream_ks_monitor(
     complement to :func:`stream_psi_monitor` (PSI needs the binning
     convention; KS asks only "did the CDF move").
 
-    Per-batch cost: batch sizes are bounded, so the two-level CDF
-    decomposition runs with its usual bounded max-task; the reference
-    side of the union dominates, amortizable exactly as documented on
-    the PSI monitor.  Replay-safe the same way (a replayed batch id
+    Per-batch cost: the reference's counts aggregate once per run,
+    so each batch pays its own distinct-value aggregate, a merge
+    against the cached counts and the bounded two-level CDF.
+    Replay-safe the same way as the PSI monitor (a replayed batch id
     overwrites its own partition).  Empty micro-batches are scored
     too — ``n_b = 0`` yields a NULL ``ks_stat`` row, keeping written
     partitions aligned with the twin's batch indices."""
     # the reference's distinct-value CDF state is not a bounded sketch
     # (unlike the PSI edges+counts), so it cannot collapse to driver
-    # literals — but it CAN be computed once: stage the reference
-    # relation for the whole run instead of rescanning it per batch.
-    # Named scope: foreachBatch runs on the STREAM EXECUTION thread,
-    # whose per-batch release must not evict the cross-thread ref.
+    # literals — but it CAN be computed once: its per-distinct-value
+    # counts are batch-independent, so they aggregate ONCE per run
+    # (staged + eagerly filled) and each micro-batch merges its own
+    # counts against them.  Named scope: foreachBatch runs on the
+    # STREAM EXECUTION thread, whose per-batch release must not evict
+    # the cross-thread ref.
     ref_tag = f"stream_ks_monitor_ref:{out_path}"
     with staging_scope(ref_tag):
-        # r15 opt: the reference's per-distinct-value counts are
-        # batch-independent, so they aggregate ONCE per run (staged +
-        # eagerly filled) and each micro-batch merges its own counts
-        # against them — per-batch cost ∝ batch, not ∝ reference
-        # (integer merge ≡ the old per-batch union+aggregate, so the
-        # statistic is bitwise unchanged).  The cache holds the counts
-        # HASH-PARTITIONED on the merge key: the cached partitioning
-        # satisfies the per-batch join's distribution requirement, so
-        # each batch shuffles only its OWN counts (guide §2.4 — two
-        # operations keyed the same way share one exchange).
+        # the cache holds the counts HASH-PARTITIONED on the merge
+        # key: the cached partitioning satisfies the per-batch join's
+        # distribution requirement, so each batch shuffles only its OWN
+        # counts (guide §2.4 — two operations keyed the same way share
+        # one exchange)
         ref_counts = stage(
             ks_side_counts(reference, value_col).repartition("__v")
         )
@@ -177,11 +175,7 @@ def stream_ks_monitor(
             out_path,
             checkpoint,
             lambda batch: ks_2sample(
-                reference,
-                batch,
-                value_col=value_col,
-                buckets=buckets,
-                a_counts=ref_counts,
+                ref_counts, batch, value_col=value_col, buckets=buckets
             ),
         )
     finally:
