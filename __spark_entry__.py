@@ -40,10 +40,8 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.inges
     stream_pq_index_ingest,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import (
-    SESSIONIZE_SQL as _SESSIONIZE_ORACLE,
-)
-from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import (
-    SLIDING_COUNTS_SQL as _SLIDING_ORACLE,
+    sessionize_sql,
+    sliding_counts_sql,
 )
 
 SMOKE_DIR = "/root/testdata/sf0.001"
@@ -456,7 +454,7 @@ def _q_events_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
 SANE_VALUE_MAX = 1e9
 
 
-def _finite_value(col: str = "value"):
+def _finite_value():
     """Keep NULL rows, drop non-finite OR insane-magnitude measures —
     the entry-level contract for moment/order-statistic/histogram
     operators (r7; magnitude arm r9).  A single NaN/Inf measurement
@@ -468,7 +466,7 @@ def _finite_value(col: str = "value"):
     counted by ``count(*)`` and skipped by every aggregate
     identically on both engines, so the filter is a no-op on every
     clean fixture.  SQL twin: ``_FINITE_VALUE_SQL``."""
-    c = F.col(col)
+    c = F.col("value")
     return c.isNull() | (
         ~F.isnan(c) & (F.abs(c) <= F.lit(SANE_VALUE_MAX))
     )
@@ -720,8 +718,8 @@ def _q_events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ref, cur = _drift_sides(spark, sf_dir)
-    frozen = psi_freeze_reference(ref, value_col="value", buckets=10)
-    return psi_profile_frozen(cur, frozen, value_col="value")
+    frozen = psi_freeze_reference(ref, buckets=10)
+    return psi_profile_frozen(cur, frozen)
 
 
 def _q_events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -738,7 +736,7 @@ def _q_events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     a, b = _drift_sides(spark, sf_dir)
-    return ks_2sample(ks_side_counts(a, "value"), b, value_col="value")
+    return ks_2sample(ks_side_counts(a), b)
 
 
 def _q_events_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,8 +751,8 @@ def _q_events_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ref, cur = _drift_sides(spark, sf_dir)
-    frozen = chi2_freeze_reference(ref, cat_col="event_type")
-    return chi2_drift_frozen(cur, frozen, cat_col="event_type")
+    frozen = chi2_freeze_reference(ref)
+    return chi2_drift_frozen(cur, frozen)
 
 
 def _q_events_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -955,8 +953,8 @@ def _staged_csv_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nation = load_table(spark, sf_dir, "nation")
     stage = scratch_dir("csv_stage", sf_dir)
-    write_csv(nation, stage, header=True)
-    return read_csv(spark, stage, schema=nation.schema, header=True)
+    write_csv(nation, stage)
+    return read_csv(spark, stage, schema=nation.schema)
 
 
 def _staged_orc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1104,7 +1102,7 @@ def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value"
     )
-    return asof_join(clicks, purchases, by="user_id")
+    return asof_join(clicks, purchases)
 
 
 def _q_interpolate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,7 +1120,7 @@ def _q_interpolate_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "value"
     )
-    return interpolate_join(clicks, purchases, by="user_id")
+    return interpolate_join(clicks, purchases)
 
 
 def _q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1156,7 +1154,6 @@ def _q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return range_join(
         errors,
         sessions,
-        point="ts",
         start="win_start",
         end="win_end",
         by="user_id",
@@ -1196,7 +1193,7 @@ def _q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         tumbling_counts,
     )
 
-    agg = tumbling_counts(stream_events(spark, sf_dir), window="1 hour")
+    agg = tumbling_counts(stream_events(spark, sf_dir))
     return run_available_now(agg, "stream_tumbling_sink", "complete")
 
 
@@ -1214,7 +1211,7 @@ def _q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = stream_events(spark, sf_dir).filter(_finite_value())
     return run_available_now(
-        tumbling_ohlc(src, window="1 hour"), "stream_ohlc_sink", "complete"
+        tumbling_ohlc(src), "stream_ohlc_sink", "complete"
     )
 
 
@@ -1229,7 +1226,7 @@ def _q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import sliding_counts
 
     agg = sliding_counts(
-        stream_events(spark, sf_dir), window="1 hour", slide="30 minutes"
+        stream_events(spark, sf_dir), slide="30 minutes"
     )
     return run_available_now(agg, "stream_sliding_sink", "complete")
 
@@ -1290,7 +1287,7 @@ def _q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("p_value"),
     )
     joined = stream_stream_interval_join(
-        clicks, purchases, by="user_id", lookback="1 hour"
+        clicks, purchases
     )
     return run_available_now(joined, "stream_stream_join_sink", "append")
 
@@ -1871,7 +1868,6 @@ def _q_customer_fuzzy_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="c_custkey",
         key_col="c_name",
         window=3,
-        max_distance=1,
         block_col=F.substring("c_name", 1, 14),
     ).orderBy("id_a", "id_b")
 
@@ -2319,7 +2315,6 @@ def _q_stream_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
         view,
         os.path.join(base, "ckpt"),
         keys=["event_type"],
-        count_col="n",
         sum_col="s",
         sum_src="value",
         partition_by=["event_type"],
@@ -2935,8 +2930,6 @@ _FUZZY_ORACLE = (
         "customer",
         id_col="c_custkey",
         key_col="c_name",
-        window=3,
-        max_distance=1,
         block_expr="substr(c_name, 1, 14)",
     )
     + " ORDER BY id_a, id_b"
@@ -3245,7 +3238,7 @@ ORACLES: dict[str, str] = {
         "'tumbling' AS shape FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 "
         "UNION ALL "
         "SELECT window_start, event_type, n, sum_value, 'sliding' AS shape "
-        f"FROM ({_SLIDING_ORACLE})"
+        f"FROM ({sliding_counts_sql()})"
     ),
     "dashboard_grouping_sets": (
         "SELECT l_returnflag, l_linestatus, count(*) AS n, "
@@ -3253,7 +3246,7 @@ ORACLES: dict[str, str] = {
         "GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), "
         "(l_returnflag), ())"
     ),
-    "stream_sliding_counts": _SLIDING_ORACLE,
+    "stream_sliding_counts": sliding_counts_sql(),
     # dashboard_approx_profile: intentionally no oracle — sketch
     # estimates (HLL++, KLL) differ per engine; error bounds are
     # unit-tested in tests/test_plans.py.
@@ -3283,7 +3276,7 @@ ORACLES: dict[str, str] = {
         "GROUP BY c.c_mktsegment, e.event_type "
         "ORDER BY c.c_mktsegment, e.event_type"
     ),
-    "events_sessionize": _SESSIONIZE_ORACLE,
+    "events_sessionize": sessionize_sql(),
     "events_range_join_sessions": (
         "WITH o AS ("
         "  SELECT user_id, ts,"
@@ -3638,7 +3631,6 @@ ORACLES["events_changepoint_profile"] = _changepoint_sql()
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import ewma_by_key_sql as _ewma_sql
 
 ORACLES["events_time_decay_profile"] = _ewma_sql(
-    keys=("event_type",),
     table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})",
 )
 
@@ -3647,7 +3639,6 @@ ORACLES["events_time_decay_profile"] = _ewma_sql(
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.ohlc import ohlc_bars_sql as _ohlc_sql
 
 ORACLES["events_ohlc_bars"] = _ohlc_sql(
-    keys=("event_type",),
     table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})",
 )
 
@@ -3662,7 +3653,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.anoma
 )
 
 ORACLES["events_anomaly_profile"] = _iqr_sql(
-    keys=("event_type",),
     table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})",
 )
 
@@ -3901,13 +3891,13 @@ _DRIFT_CUR_SQL = (
     f"SELECT * FROM events WHERE ts >= TIMESTAMP '{_DRIFT_SPLIT}'"
 )
 ORACLES["events_psi_drift"] = _psi_sql(
-    _DRIFT_REF_SQL, _DRIFT_CUR_SQL, value_col="value", buckets=10
+    _DRIFT_REF_SQL, _DRIFT_CUR_SQL
 )
 ORACLES["events_ks_drift"] = _ks_sql(
-    _DRIFT_REF_SQL, _DRIFT_CUR_SQL, value_col="value"
+    _DRIFT_REF_SQL, _DRIFT_CUR_SQL
 )
 ORACLES["events_chi2_drift"] = _chi2_sql(
-    _DRIFT_REF_SQL, _DRIFT_CUR_SQL, cat_col="event_type"
+    _DRIFT_REF_SQL, _DRIFT_CUR_SQL
 )
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.association import (  # noqa: E402

@@ -48,9 +48,12 @@ SKIP = {
     "json_ingest_roundtrip",
     "csv_ingest_roundtrip",
     "orc_ingest_roundtrip",
-    # r10: runs the availableNow PSI scoring on invocation; the
-    # returned frame is the profile-table read-back
+    # r10: run the availableNow drift scoring (one shared
+    # _stream_monitor drain) on invocation; the returned frame is the
+    # profile-table read-back
     "stream_psi_monitor",
+    "stream_ks_monitor",
+    "stream_chi2_monitor",
     # r10: runs the greedy selection rounds (bounded collects) on
     # invocation; the returned frame is a literal relation
     "vec_mmr_rerank",

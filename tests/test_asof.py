@@ -38,7 +38,7 @@ def test_backward_matches_latest_at_or_before(spark):
     left, right = _frames(spark)
     out = {
         r.tag: (r.asof_ts, r.asof_price)
-        for r in asof_join(left, right, by="user_id").collect()
+        for r in asof_join(left, right).collect()
     }
     assert out["a"] == (_ts(10), 200.0)  # tie at :10 matches
     assert out["b"] == (_ts(15), 300.0)  # latest before :20
@@ -50,7 +50,7 @@ def test_forward_matches_earliest_at_or_after(spark):
     left, right = _frames(spark)
     out = {
         r.tag: (r.asof_ts, r.asof_price)
-        for r in asof_join(left, right, by="user_id", direction="forward").collect()
+        for r in asof_join(left, right, direction="forward").collect()
     }
     assert out["a"] == (_ts(10), 200.0)  # tie still matches
     assert out["b"] == (None, None)  # nothing at or after :20
@@ -62,7 +62,7 @@ def test_tolerance_nulls_stale_matches(spark):
     out = {
         r.tag: r.asof_price
         for r in asof_join(
-            left, right, by="user_id", tolerance=F.expr("INTERVAL 3 MINUTE")
+            left, right, tolerance=F.expr("INTERVAL 3 MINUTE")
         ).collect()
     }
     assert out["a"] == 200.0  # gap 0 ≤ 3min
@@ -77,7 +77,7 @@ def test_duplicate_right_rows_resolve_deterministically(spark):
         [(1, _ts(9), 1.0), (1, _ts(9), 2.0)],
         "user_id long, ts timestamp, price double",
     )
-    out = asof_join(left, right, by="user_id").collect()
+    out = asof_join(left, right).collect()
     assert len(out) == 1
     assert out[0].asof_price == 2.0  # max payload survives the dedup
 
@@ -97,7 +97,7 @@ def test_matches_duckdb_asof_on_events(spark, smoke_dir):
     )
     got = {
         r.event_id: (r.asof_ts, r.asof_value)
-        for r in asof_join(clicks, purchases, by="user_id").collect()
+        for r in asof_join(clicks, purchases).collect()
     }
     con = duckdb.connect()
     con.execute(
@@ -145,7 +145,7 @@ def test_property_backward_asof_matches_python_reference(spark):
     )
     got = {
         r.pid: (r.asof_ts, r.asof_price)
-        for r in asof_join(left, right, by="user_id").collect()
+        for r in asof_join(left, right).collect()
     }
 
     # python reference with the operator's dedup rule (max payload per

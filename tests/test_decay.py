@@ -24,8 +24,7 @@ def _df(spark, rows):
 
 def _row(spark, rows, key="a"):
     out = ewma_by_key(
-        _df(spark, rows), keys=["k"], ts_col="ts", value_col="value",
-        half_life_s=HL,
+        _df(spark, rows), keys=["k"], half_life_s=HL,
     ).collect()
     return {r["k"]: r for r in out}[key]
 

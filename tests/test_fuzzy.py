@@ -26,7 +26,7 @@ def test_window_pairs_within_threshold(names):
     got = {
         (r.id_a, r.id_b): r.distance
         for r in fuzzy_pairs_sorted_neighborhood(
-            names, "id", "name", window=2, max_distance=1
+            names, "id", "name", window=2
         ).collect()
     }
     assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 1}
@@ -36,7 +36,7 @@ def test_window_one_misses_distant_sort_neighbors(names):
     got = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            names, "id", "name", window=1, max_distance=1
+            names, "id", "name", window=1
         ).collect()
     }
     # alpha-alphz are 2 apart in sort order: window=1 cannot see them
@@ -51,14 +51,13 @@ def test_blocking_cuts_cross_block_pairs(spark):
     unblocked = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", window=2, max_distance=1
+            df, "id", "name", window=2
         ).collect()
     }
     blocked = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", window=2, max_distance=1,
-            block_col=F.substring("name", 1, 1),
+            df, "id", "name", window=2, block_col=F.substring("name", 1, 1),
         ).collect()
     }
     assert (1, 2) in unblocked and (1, 2) in blocked
@@ -83,7 +82,7 @@ def test_multi_pass_reversed_key_recovers_prefix_typos(spark):
     fwd = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", window=1, max_distance=1
+            df, "id", "name", window=1
         ).collect()
     }
     assert (1, 2) not in fwd  # prefix typo: not sort-adjacent forward
@@ -92,7 +91,6 @@ def test_multi_pass_reversed_key_recovers_prefix_typos(spark):
         "id",
         "rname",
         window=1,
-        max_distance=1,
     ).select("id_a", "id_b", "distance")
     both = fwd | {(r.id_a, r.id_b) for r in rev.collect()}
     assert (1, 2) in both
@@ -117,7 +115,7 @@ def test_block_col_may_name_another_column(spark):
     pairs = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", max_distance=1, block_col="zip"
+            df, "id", "name", block_col="zip"
         ).collect()
     }
     # 1-2 share a block and are 1 edit apart; 3 is blocked away

@@ -120,7 +120,7 @@ class TestCsvSink:
     def test_header_roundtrip(self, spark, orders, tmp_path):
         out = str(tmp_path / "orders_csv")
         slim = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
-        write_csv(slim, out, header=True, coalesce=1)
+        write_csv(slim, out, coalesce=1)
         back = read_csv(
             spark,
             out,

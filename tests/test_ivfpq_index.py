@@ -481,7 +481,7 @@ def test_stream_pq_index_ingest_matches_frozen_rebuild(
     )
     idx = os.path.join(base, "index")
     stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=4, m=4, k_codes=8
+        stream, idx, os.path.join(base, "ckpt"), n_cells=4, k_codes=8
     )
     assert spark.read.parquet(f"{idx}/codes").count() == 96
     assert spark.read.parquet(f"{idx}/vectors").count() == 96
@@ -529,7 +529,7 @@ def test_stream_pq_index_ingest_two_wave_replay(spark, tmp_path_factory):
     )
     idx = os.path.join(base, "index")
     stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=4, m=4, k_codes=8
+        stream, idx, os.path.join(base, "ckpt"), n_cells=4, k_codes=8
     )
     before_codes = sorted(
         map(tuple, spark.read.parquet(f"{idx}/codes").collect())
@@ -581,7 +581,7 @@ def test_stream_pq_ingest_recovers_interrupted_build(
         .parquet(src)
     )
     stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=4, m=4, k_codes=8
+        stream, idx, os.path.join(base, "ckpt"), n_cells=4, k_codes=8
     )
     assert spark.read.parquet(f"{idx}/codes").count() == 64
     assert spark.read.parquet(f"{idx}/vectors").count() == 64
@@ -655,7 +655,7 @@ def test_multirerank_equals_independent_calls(spark):
         multi = dict(
             lvec.top_k_ann_ivfpq_multirerank(
                 emb, q, k=4, reranks=(1, 2, 4), n_cells=4, n_probe=2,
-                m=4, k_codes=8,
+                k_codes=8,
             )
         )
         for r in (1, 2, 4):

@@ -193,7 +193,7 @@ class TestMlNearDup:
     def test_approx_join_matches_banded(self, docs):
         got = {
             (r.id_a, r.id_b)
-            for r in ldd.near_dup_pairs_ml(docs, max_jaccard_distance=0.5).collect()
+            for r in ldd.near_dup_pairs_ml(docs).collect()
         }
         assert (1, 2) in got and (1, 3) in got
         assert not any(4 in p for p in got)
@@ -202,10 +202,10 @@ class TestMlNearDup:
 class TestCosineNearDupBanded:
     def test_derive_n_planes_scales_with_corpus(self):
         # constant expected bucket size: 2^planes tracks N/target
-        assert lvec.derive_n_planes(500, target_bucket_size=1024) == 4
-        assert lvec.derive_n_planes(2**15, target_bucket_size=1024) == 5
-        assert lvec.derive_n_planes(2**20, target_bucket_size=1024) == 10
-        assert lvec.derive_n_planes(2**40, target_bucket_size=1024) == 24  # cap
+        assert lvec.derive_n_planes(500) == 4
+        assert lvec.derive_n_planes(2**15) == 5
+        assert lvec.derive_n_planes(2**20) == 10
+        assert lvec.derive_n_planes(2**40) == 24  # cap
 
     def test_plane_pool_prefix_matches_legacy_planes(self):
         assert lvec.PLANE_POOL[: lvec.N_PLANES] == lvec.PLANES

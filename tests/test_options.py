@@ -1,0 +1,315 @@
+"""Option guard (a plain AST scan, no Spark): one value in use is a
+constant.  Every defaulted parameter of a module-level function in the
+package or the entry module must be passed a value other than its
+default by some call in the repo — the package, the entry module,
+``bench.py``, ``scripts/``, ``perfbench/`` or ``tests/``.  A parameter
+no call sets is a knob nothing turns: drop it and inline its value.
+
+A call passes a parameter through a keyword, a positional, a
+``*args`` / ``**kwargs`` spread or a ``functools.partial``.  A literal
+equal to the parameter's default does not count as setting it.  Call
+targets are matched by name (import aliases resolved, without
+scoping), so a call to one function counts for every package function
+of that name.  A call whose target the scan cannot name — a local, a
+subscript or a call result, such as ``queries()[name](spark, data)`` or
+``_stream_monitor``'s ``monitor`` — counts its keywords and
+positionals for every package function the repo passes as a value.
+Keywords a call passes into a function's ``**kwargs`` (a test helper's
+``**kw``, say) count at the calls in its body that spread them on.
+These rules can only hide an unset parameter.
+
+``ALLOWED`` names the parameters kept settable anyway; each carries
+the reason."""
+
+import ast
+import builtins
+import itertools
+import os
+
+from test_reachability import PKG, ROOT, _sources
+
+#: ``path::func.param`` → why a parameter no call sets stays.
+ALLOWED = {
+    f"{PKG}/session.py::get_spark.master": (
+        "deployment setting: on a cluster the master comes from the "
+        "submitting environment, not from code in this repo"
+    ),
+    f"{PKG}/llm/staging.py::release_staging.blocking": (
+        "perfbench/run.py calls release_staging(blocking=True); the "
+        "benchmark is frozen, so its call must keep working"
+    ),
+}
+
+
+def _files():
+    """``path`` → source of every Python file whose calls count."""
+    paths = list(_sources())
+    for top in ("tests", os.path.join("perfbench", "tests")):
+        for dirpath, dirs, files in os.walk(os.path.join(ROOT, top)):
+            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
+            paths += [
+                os.path.relpath(os.path.join(dirpath, f), ROOT)
+                for f in sorted(files)
+                if f.endswith(".py")
+            ]
+    out = {}
+    for path in paths:
+        with open(os.path.join(ROOT, path)) as f:
+            out[path] = f.read()
+    return out
+
+
+def _defines_options(path):
+    return path.startswith(PKG + os.sep) or path == "__spark_entry__.py"
+
+
+def _literal(node):
+    """``(type, value)`` of a literal expression, else ``None``."""
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return None
+    return type(value), value
+
+
+class _Function:
+    def __init__(self, path, node):
+        self.key, self.node = f"{path}::{node.name}", node
+        a = node.args
+        self.positional = [p.arg for p in a.posonlyargs + a.args]
+        pos_defaults = dict(zip(self.positional[len(self.positional) - len(a.defaults):], a.defaults))
+        kw_defaults = {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+        self.defaults = {**pos_defaults, **kw_defaults}
+        self.set = set()
+
+    def passes(self, param, value):
+        """Record that a call passes ``value`` (``None``: an unknown
+        value, such as a spread) to ``param``."""
+        if param not in self.defaults:
+            return
+        default = self.defaults[param]
+        if value is not None:
+            lit = _literal(value)
+            if lit is not None and lit == _literal(default):
+                return
+            if lit is None and ast.dump(value) == ast.dump(default):
+                return
+        self.set.add(param)
+
+    def call(self, args, keywords):
+        for i, arg in enumerate(args):
+            if isinstance(arg, ast.Starred):
+                for p in self.positional[i:]:
+                    self.passes(p, None)
+                break
+            if i < len(self.positional):
+                self.passes(self.positional[i], arg)
+        for kw in keywords:
+            if kw.arg is None:
+                for p in self.defaults:
+                    self.passes(p, None)
+            else:
+                self.passes(kw.arg, kw.value)
+
+
+def _is_package_module(module, level):
+    return level > 0 or (module or "").split(".")[0] in (PKG, "__spark_entry__")
+
+
+class _File:
+    """Call-target resolution within one file: import aliases,
+    ``functools.partial`` and the file's own definitions."""
+
+    def __init__(self, tree, funcs):
+        self.tree, self.funcs = tree, funcs
+        self.aliases, self.external, self.partials = {}, set(), set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    local = a.asname or a.name
+                    if _is_package_module(node.module, node.level):
+                        self.aliases[local] = a.name
+                    elif node.module == "functools" and a.name == "partial":
+                        self.partials.add(local)
+                    else:
+                        self.external.add(local)
+            elif isinstance(node, ast.Import):
+                self.external.update(a.asname or a.name.split(".")[0] for a in node.names)
+        self.defs = {
+            n.name: n
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        self.local = set(self.defs) | {
+            t.id
+            for node in tree.body
+            for t in (node.targets if isinstance(node, ast.Assign) else [])
+            if isinstance(t, ast.Name)
+        }
+
+    def name_of(self, func):
+        if isinstance(func, ast.Name):
+            return self.aliases.get(func.id, func.id)
+        if isinstance(func, ast.Attribute):
+            return func.attr
+        return None
+
+    def resolve(self, call):
+        """``(kind, target, args)`` for ``call``: kind ``"package"``
+        (target: the package functions of that name), ``"local"`` (a
+        definition in this file), ``"unnamed"`` (a local value, a
+        subscript, a call result) or ``None`` (a method, a builtin or a
+        non-package function)."""
+        func, args = call.func, call.args
+        if args and (
+            (isinstance(func, ast.Name) and func.id in self.partials)
+            or (
+                isinstance(func, ast.Attribute)
+                and func.attr == "partial"
+                and isinstance(func.value, ast.Name)
+                and func.value.id == "functools"
+            )
+        ):
+            func, args = args[0], args[1:]
+        name = self.name_of(func)
+        if name in self.funcs and not (isinstance(func, ast.Name) and func.id in self.external):
+            return "package", self.funcs[name], args
+        if isinstance(func, ast.Attribute):
+            return None, None, args
+        if isinstance(func, ast.Name):
+            if func.id in self.defs:
+                return "local", self.defs[func.id], args
+            if func.id in self.external or func.id in self.local or hasattr(builtins, func.id):
+                return None, None, args
+        return "unnamed", None, args
+
+
+def _unset(files):
+    """Sorted ``path::func.param`` of every defaulted parameter of a
+    module-level package or entry function that no call in ``files``
+    (``path`` → source) passes a non-default value."""
+    trees = {path: ast.parse(src) for path, src in files.items()}
+    funcs = {}
+    for path, tree in trees.items():
+        if _defines_options(path):
+            for node in tree.body:
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    funcs.setdefault(node.name, []).append(_Function(path, node))
+    ctx = {path: _File(tree, funcs) for path, tree in trees.items()}
+
+    # where each definition's ``**kwargs`` goes: the calls in its body
+    # that spread it on
+    spreads = {}
+    for c in ctx.values():
+        for fdef in ast.walk(c.tree):
+            if isinstance(fdef, (ast.FunctionDef, ast.AsyncFunctionDef)) and fdef.args.kwarg:
+                kw = fdef.args.kwarg.arg
+                spreads[id(fdef)] = [
+                    c.resolve(n)[:2]
+                    for n in ast.walk(fdef)
+                    if isinstance(n, ast.Call)
+                    and any(
+                        k.arg is None and isinstance(k.value, ast.Name) and k.value.id == kw
+                        for k in n.keywords
+                    )
+                ]
+
+    unnamed, as_values = [], set()
+
+    def forward(fdef, keywords, depth=0):
+        """Keywords a call passes into ``fdef``'s ``**kwargs`` reach
+        the calls that spread it on."""
+        a = fdef.args
+        own = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+        extra = [k for k in keywords if k.arg and k.arg not in own]
+        if not extra or a.kwarg is None or depth > 3:
+            return
+        for kind, target in spreads[id(fdef)]:
+            if kind == "package":
+                for f in target:
+                    f.call([], extra)
+                    forward(f.node, extra, depth + 1)
+            elif kind == "local" and not isinstance(target, ast.ClassDef):
+                forward(target, extra, depth + 1)
+            elif kind == "unnamed":
+                unnamed.append(([], extra))
+
+    for c in ctx.values():
+        # references called, or bound under their own name (then called
+        # by that name), are not passed as values
+        callees = {
+            id(node.value)
+            for node in ast.walk(c.tree)
+            if isinstance(node, ast.Assign)
+            and all(c.name_of(t) == c.name_of(node.value) for t in node.targets)
+        }
+        for node in ast.walk(c.tree):
+            if not isinstance(node, ast.Call):
+                continue
+            callees.add(id(node.func))
+            kind, target, args = c.resolve(node)
+            if kind == "package":
+                for f in target:
+                    f.call(args, node.keywords)
+                    forward(f.node, node.keywords)
+            elif kind == "local" and not isinstance(target, ast.ClassDef):
+                forward(target, node.keywords)
+            elif kind == "unnamed":
+                # spreads at an unnamed target stay unattributed
+                plain = list(itertools.takewhile(lambda a: not isinstance(a, ast.Starred), args))
+                unnamed.append((plain, [k for k in node.keywords if k.arg]))
+        for node in ast.walk(c.tree):
+            if (
+                isinstance(node, (ast.Name, ast.Attribute))
+                and isinstance(node.ctx, ast.Load)
+                and id(node) not in callees
+                and c.name_of(node) in funcs
+                and not (isinstance(node, ast.Name) and node.id in c.external)
+            ):
+                as_values.add(c.name_of(node))
+
+    for name in as_values:
+        for f in funcs[name]:
+            for args, keywords in unnamed:
+                f.call(args, keywords)
+    return sorted(
+        f"{f.key}.{p}" for fs in funcs.values() for f in fs for p in f.defaults if p not in f.set
+    )
+
+
+def test_scan_flags_a_parameter_no_call_sets():
+    planted = {
+        f"{PKG}/m.py": (
+            "import functools\n"
+            "def f(a, k=1, *, j=2, unset=3, same='x'):\n    return a\n"
+            "def g(df, spread=0, *, by='id'):\n    return df\n"
+            "def h(x, n=5, w=0):\n    return x\n"
+            "def run(fn, *a):\n    fn(0, w=1)\n    return g(*a)\n"
+            "def e(x, deep=1):\n    return x\n"
+        ),
+        "tests/test_m.py": (
+            "import functools\n"
+            f"from {PKG}.m import e, f as ff, h, run\n"
+            "from functools import partial\n"
+            "def helper(fn, **kw):\n    return fn(0, **kw)\n"
+            "helper(e, deep=2)\n"
+            "ff(1, 2, same='x')\n"
+            "functools.partial(ff, j=9)\n"
+            "run(h)\n"
+            "partial(h, n=6)\n"
+        ),
+    }
+    m = f"{PKG}/m.py::"
+    assert _unset(planted) == [m + "f.same", m + "f.unset", m + "g.by"]
+
+
+def test_every_option_is_set_by_some_call():
+    unset = [p for p in _unset(_files()) if p not in ALLOWED]
+    assert unset == [], (
+        "defaulted parameters no call sets to another value (inline "
+        "the value as a constant and delete the parameter):\n  " + "\n  ".join(unset)
+    )
+
+
+def test_allowlist_holds_only_unset_options():
+    assert sorted(ALLOWED) == [p for p in _unset(_files()) if p in ALLOWED]

@@ -585,7 +585,7 @@ class TestMixtureSample:
         con.register("docs", pdf)
         sql = lsmp.mixture_report_sql(
             self.W, table="docs", domain_expr="domain",
-            id_expr="doc_id", tokens_expr="n_tok",
+            tokens_expr="n_tok",
         )
         oracle = [tuple(r) for r in con.execute(sql).fetchall()]
         got = [

@@ -194,7 +194,6 @@ class TestMixtureParityProperty:
                     weights,
                     table="docs",
                     domain_expr="domain",
-                    id_expr="doc_id",
                     tokens_expr="n_tok",
                 )
             ).fetchall()
@@ -249,7 +248,7 @@ class TestInterpolateAgainstNumpy:
         got = {
             r.qid: r.interp_value
             for r in interpolate_join(
-                qdf, sdf, on="ts", by="user_id"
+                qdf, sdf
             ).collect()
         }
         xs = np.array(sorted(sec for sec, _ in series), dtype=float)
@@ -316,7 +315,7 @@ class TestAsofAgainstPandasMergeAsof:
         )
         got = {
             r.lid: (r.asof_ts, r.asof_value)
-            for r in asof_join(ldf, rdf, on="ts", by="user_id").collect()
+            for r in asof_join(ldf, rdf).collect()
         }
         lp = pd.DataFrame(
             [(i, k, t0 + dt.timedelta(seconds=sec)) for i, (k, sec) in enumerate(left)],

@@ -53,7 +53,7 @@ class TestDecontamination:
     def test_decontaminate_removes_flagged_only(self, corpus, bench):
         kept = sorted(
             r.doc_id
-            for r in ldec.decontaminate(corpus, bench, min_shared=2).collect()
+            for r in ldec.decontaminate(corpus, bench).collect()
         )
         assert kept == [2, 3, 4]
 

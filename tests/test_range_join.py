@@ -112,7 +112,6 @@ def test_matches_duckdb_inequality_join(spark, smoke_dir):
         for r in range_join(
             errors,
             sessions,
-            point="ts",
             start="session_start",
             end="last_ts",
             by="user_id",

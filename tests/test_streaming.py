@@ -46,6 +46,38 @@ def test_available_now_is_deterministic(spark, smoke_dir):
     assert sorted(map(str, a)) == sorted(map(str, b))
 
 
+def test_available_now_jobs_carry_the_callers_job_tag(spark, smoke_dir):
+    """Micro-batch jobs run on the stream execution thread under a job
+    group of their own (the query's run id), so ``setJobGroup`` cannot
+    attribute them to the caller — but the caller's job TAGS reach
+    them.  Read back from the status store: every job the run started
+    carries the tag."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def tags_by_job():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        out = {}
+        for i in range(jobs.size()):
+            job = jobs.apply(i)
+            tags = job.jobTags()
+            out[job.jobId()] = {tags.apply(k) for k in range(tags.size())}
+        return out
+
+    before = set(tags_by_job())
+    sc.addJobTag("t_available_now_tag")
+    try:
+        run_available_now(
+            tumbling_counts(stream_events(spark, smoke_dir)), "t_job_tags", "complete"
+        )
+    finally:
+        sc.removeJobTag("t_available_now_tag")
+    run = {j: t for j, t in tags_by_job().items() if j not in before}
+    assert run, "the availableNow run started no job"
+    assert all("t_available_now_tag" in t for t in run.values()), run
+
+
 def test_append_mode_holds_back_open_windows(spark, tmp_path):
     """Append mode only emits a window once the watermark passes its
     end: feeding one batch of data leaves the trailing window(s) open
@@ -69,7 +101,7 @@ def test_append_mode_holds_back_open_windows(spark, tmp_path):
         .parquet(str(src))
     )
     out = run_available_now(
-        tumbling_counts(stream, window="1 hour", watermark="30 minutes"),
+        tumbling_counts(stream, watermark="30 minutes"),
         "t_append_watermark",
         "append",
     )

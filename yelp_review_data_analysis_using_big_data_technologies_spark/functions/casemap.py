@@ -37,7 +37,6 @@ SUPER_CATEGORIES: dict[str, tuple[str, ...]] = {
 def first_match_category(
     col: Column | str,
     categories: Mapping[str, Sequence[str]] = SUPER_CATEGORIES,
-    default: str = "Other",
 ) -> Column:
     """Native replacement for the reference's ``map_super_category``
     Python UDF (scripts/etl.py:76-88, U1 in SURVEY.md §2.8).
@@ -48,7 +47,7 @@ def first_match_category(
     - *substring* containment, case-sensitive, not token match:
       "Fast Food" matches keyword "Food" but "Seafood" does NOT
       (lower-case ``f``; pinned by tests/test_casemap.py:38-41);
-    - NULL input → ``default`` (reference scripts/etl.py:77-78).
+    - NULL input → ``"Other"`` (reference scripts/etl.py:77-78).
 
     Implemented as one chained CASE WHEN so the whole expression is
     codegen'd JVM-side — no per-row pickling through a Python worker.
@@ -64,10 +63,10 @@ def first_match_category(
             continue
         expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
     if expr is None:
-        return F.lit(default)
+        return F.lit("Other")
     # NULL.contains(...) yields NULL → falls through every branch →
-    # otherwise(default), matching the UDF's None → "Other".
-    return expr.otherwise(F.lit(default))
+    # otherwise("Other"), matching the UDF's None → "Other".
+    return expr.otherwise(F.lit("Other"))
 
 
 def sentiment(

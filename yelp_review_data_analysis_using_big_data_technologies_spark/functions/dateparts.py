@@ -14,7 +14,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.functions.colum
 
 
 
-def to_date_col(col: Column | str, fmt: str | None = None) -> Column:
+def to_date_col(col: Column | str) -> Column:
     """C3 — parse string/timestamp → DATE (reference scripts/etl.py:105).
 
     ``try_to_date``, not ``to_date``: the reference ran non-ANSI
@@ -25,7 +25,7 @@ def to_date_col(col: Column | str, fmt: str | None = None) -> Column:
     not kill a 100 TB pipeline — NULL-on-malformed is the documented
     contract, matching the reference and DuckDB's TRY_CAST."""
     c = _as_col(col)
-    return F.try_to_date(c, fmt) if fmt else F.try_to_date(c)
+    return F.try_to_date(c)
 
 
 def date_parts(col: Column | str) -> dict[str, Column]:

@@ -169,12 +169,7 @@ def _round(
     return stats, nxt_seq.drop("sel")
 
 
-def bpe_merge_steps(
-    df: DataFrame,
-    k: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_merge_steps(df: DataFrame, k: int = 6) -> DataFrame:
     """Learn ``k`` BPE merges over the whitespace token stream of
     ``df`` and return the merge table with the post-merge stream
     accounting: one row per merge step ``(step, sym_a, sym_b,
@@ -187,10 +182,10 @@ def bpe_merge_steps(
     from .staging import stage
 
     seq = stage(
-        df.filter(F.col(text_col).isNotNull())
+        df.filter(F.col("text").isNotNull())
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(tokens(text_col)).alias("pos", "sym"),
+            F.col("doc_id"),
+            F.posexplode(tokens("text")).alias("pos", "sym"),
         )
     )
     steps: list[DataFrame] = []
@@ -259,29 +254,24 @@ def _round_sql(i: int) -> str:
     )
 
 
-def bpe_merge_steps_sql(k: int = 6, table: str = "documents") -> str:
+def bpe_merge_steps_sql() -> str:
     """DuckDB twin of :func:`bpe_merge_steps`: the K rounds unrolled
     as CTE blocks (deterministic ties pinned by the same ORDER BY)."""
-    blocks = ", ".join(_round_sql(i) for i in range(1, k + 1))
-    stats = " UNION ALL ".join(f"SELECT * FROM stat{i}" for i in range(1, k + 1))
+    blocks = ", ".join(_round_sql(i) for i in range(1, 7))
+    stats = " UNION ALL ".join(f"SELECT * FROM stat{i}" for i in range(1, 7))
     return (
         "WITH seq0 AS ("
         "  SELECT doc_id,"
         "         unnest(range(len(toks))) AS pos,"
         "         unnest(toks) AS sym, FALSE AS sel"
-        f"  FROM (SELECT doc_id, {_TOK_SQL} AS toks FROM {table}"
+        f"  FROM (SELECT doc_id, {_TOK_SQL} AS toks FROM documents"
         "        WHERE text IS NOT NULL)"
         f"), {blocks} "
         f"{stats} ORDER BY step"
     )
 
 
-def bpe_encode_stats(
-    df: DataFrame,
-    k: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_encode_stats(df: DataFrame, k: int = 6) -> DataFrame:
     """APPLY the ``k`` learned merges (r15 follow-on: the tokenizer
     train → apply pair): re-runs the same deterministic merge rounds
     over ``df``'s token stream and reports the per-document encoding
@@ -293,10 +283,10 @@ def bpe_encode_stats(
     from .staging import stage
 
     seq = stage(
-        df.filter(F.col(text_col).isNotNull())
+        df.filter(F.col("text").isNotNull())
         .select(
-            F.col(id_col).alias("doc_id"),
-            F.posexplode(tokens(text_col)).alias("pos", "sym"),
+            F.col("doc_id"),
+            F.posexplode(tokens("text")).alias("pos", "sym"),
         )
     )
     before = seq.groupBy("doc_id").agg(
@@ -319,21 +309,21 @@ def bpe_encode_stats(
     )
 
 
-def bpe_encode_stats_sql(k: int = 6, table: str = "documents") -> str:
+def bpe_encode_stats_sql() -> str:
     """DuckDB twin of :func:`bpe_encode_stats`: the SAME unrolled
     round blocks as :func:`bpe_merge_steps_sql`, aggregated per doc
     instead of per step."""
-    blocks = ", ".join(_round_sql(i) for i in range(1, k + 1))
+    blocks = ", ".join(_round_sql(i) for i in range(1, 7))
     return (
         "WITH seq0 AS ("
         "  SELECT doc_id,"
         "         unnest(range(len(toks))) AS pos,"
         "         unnest(toks) AS sym, FALSE AS sel"
-        f"  FROM (SELECT doc_id, {_TOK_SQL} AS toks FROM {table}"
+        f"  FROM (SELECT doc_id, {_TOK_SQL} AS toks FROM documents"
         "        WHERE text IS NOT NULL)"
         f"), {blocks}, "
         "__before AS (SELECT doc_id, count(*) AS n_before FROM seq0 GROUP BY doc_id), "
-        f"__after AS (SELECT doc_id, count(*) AS n_after FROM seq{k} GROUP BY doc_id) "
+        f"__after AS (SELECT doc_id, count(*) AS n_after FROM seq6 GROUP BY doc_id) "
         "SELECT doc_id, n_before, n_after, "
         "round(n_after * 1.0 / n_before, 6) AS ratio "
         "FROM __before JOIN __after USING (doc_id) ORDER BY doc_id"

@@ -38,12 +38,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """Component label per node: ``(id, cluster_id)`` where
     ``cluster_id`` is the minimum node id reachable through ``pairs``.
     Only nodes that appear in at least one pair are emitted
@@ -66,11 +61,11 @@ def connected_components(
     formulation for such graphs.
     """
     # NULL endpoints: see docstring — no label assignment is right
-    pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+    pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
         )
         .dropDuplicates(["src", "dst"])
         # Materialize once: every iteration re-reads the edge set, and
@@ -146,12 +141,7 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return (row.n, row.x if row.x is not None else 0)
 
 
-def connected_components_alternating(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
+def connected_components_alternating(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Connected components by alternating large-star/small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — same output contract as
@@ -178,11 +168,11 @@ def connected_components_alternating(
     # (greatest/least SKIP nulls, so (A, NULL) would otherwise turn
     # into a self-pair here while min-label drops it: the two
     # formulations must agree)
-    pairs = pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+    pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
     edges = (
         pairs.select(
-            F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
-            F.least(F.col(id_a), F.col(id_b)).alias("v"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("u"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates()
@@ -256,8 +246,8 @@ def connected_components_alternating(
         .dropDuplicates()
     )
     nodes = (
-        pairs.select(F.col(id_a).alias("doc_id"))
-        .unionAll(pairs.select(F.col(id_b).alias("doc_id")))
+        pairs.select(F.col("id_a").alias("doc_id"))
+        .unionAll(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
     singletons = nodes.join(labeled, on="doc_id", how="left_anti").select(
@@ -266,7 +256,7 @@ def connected_components_alternating(
     return labeled.unionAll(singletons)
 
 
-def connected_components_sql(pairs_sql: str, id_out: str = "doc_id") -> str:
+def connected_components_sql(pairs_sql: str) -> str:
     """DuckDB twin: recursive reachability over the same pair set,
     component label = min reachable id.  ``pairs_sql`` must yield
     columns ``id_a``/``id_b``."""
@@ -283,17 +273,12 @@ __reach(src, dst) AS (
   UNION
   SELECT r.src, e.dst FROM __reach r JOIN __edges e ON r.dst = e.src
 )
-SELECT src AS {id_out}, least(src, min(dst)) AS cluster_id
-FROM __reach GROUP BY src ORDER BY {id_out}
+SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
+FROM __reach GROUP BY src ORDER BY doc_id
 """
 
 
-def label_propagation(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    iterations: int = 4,
-) -> DataFrame:
+def label_propagation(pairs: DataFrame) -> DataFrame:
     """Fixed-iteration synchronous LABEL PROPAGATION communities →
     ``(doc_id, community_id)`` — the density-aware complement to
     connected components: CC answers "what is transitively
@@ -303,14 +288,14 @@ def label_propagation(
     near-dup corpora this is the community view of borderline pairs
     that chain otherwise-distinct template families together.
 
-    Update rule, run for a FIXED ``iterations`` from ``label(v) = v``:
+    Update rule, run for a FIXED 4 iterations from ``label(v) = v``:
     ``label'(v) = argmax_l count(l among v's neighbors)``, ties to
     the SMALLEST label — fully deterministic (integer counts, total
-    tie order), so the DuckDB twin unrolls the same K steps
+    tie order), so the DuckDB twin unrolls the same 4 steps
     (:func:`label_propagation_sql`) and the driver can hash both.
     Fixed iterations rather than convergence: synchronous LPA can
     two-cycle on bipartite-ish structure, so "converged" is not
-    well-defined; K steps of a deterministic map are.
+    well-defined; 4 steps of a deterministic map are.
 
     Plan shape: per iteration one shuffle join of the |V|-row label
     relation onto the symmetrized edge relation, one (dst, label)
@@ -326,9 +311,7 @@ def label_propagation(
 
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
 
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    a, b = F.col(id_a), F.col(id_b)
+    a, b = F.col("id_a"), F.col("id_b")
     fwd = pairs.where(a.isNotNull() & b.isNotNull() & (a != b)).select(
         a.alias("__src"), b.alias("__dst")
     )
@@ -345,7 +328,7 @@ def label_propagation(
     w = Window.partitionBy("__dst").orderBy(
         F.desc("__c"), F.asc("__l")
     )
-    for _ in range(iterations):
+    for _ in range(4):
         votes = (
             edges.join(labels, edges["__src"] == labels["id"])
             .groupBy("__dst", "__l")
@@ -368,18 +351,12 @@ def label_propagation(
     ).orderBy("doc_id")
 
 
-def label_propagation_sql(
-    pairs_sql: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    iterations: int = 4,
-    id_out: str = "doc_id",
-) -> str:
-    """DuckDB twin of :func:`label_propagation` — the same K
+def label_propagation_sql(pairs_sql: str) -> str:
+    """DuckDB twin of :func:`label_propagation` — the same 4
     neighbor-majority steps unrolled as chained CTEs (same
     construction as the unrolled PageRank twin)."""
     steps = []
-    for k in range(iterations):
+    for k in range(4):
         steps.append(
             f"l{k + 1} AS (\n"
             f"  SELECT dst AS id, l FROM (\n"
@@ -394,8 +371,8 @@ def label_propagation_sql(
     return f"""
 WITH pairs AS ({pairs_sql}),
 fwd AS (
-  SELECT {id_a} AS src, {id_b} AS dst FROM pairs
-  WHERE {id_a} IS NOT NULL AND {id_b} IS NOT NULL AND {id_a} <> {id_b}
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  WHERE id_a IS NOT NULL AND id_b IS NOT NULL AND id_a <> id_b
 ),
 edges AS (
   SELECT DISTINCT src, dst FROM (
@@ -404,6 +381,6 @@ edges AS (
 ),
 l0 AS (SELECT DISTINCT src AS id, src AS l FROM edges),
 {chain}
-SELECT id AS {id_out}, l AS community_id FROM l{iterations}
-ORDER BY {id_out}
+SELECT id AS doc_id, l AS community_id FROM l4
+ORDER BY doc_id
 """

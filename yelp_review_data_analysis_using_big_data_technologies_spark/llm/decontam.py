@@ -42,13 +42,10 @@ from .text import shingled
 def contamination_overlap(
     corpus: DataFrame,
     benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
     min_shared: int = 2,
 ) -> DataFrame:
     """(doc_id, n_shared) for corpus docs sharing ≥ ``min_shared``
-    distinct ``shingle_n``-grams with ANY benchmark text.  The
+    distinct 3-grams with ANY benchmark text.  The
     benchmark's distinct-shingle fingerprint is broadcast — the corpus
     is filtered map-side and only matched postings reach the one
     aggregation shuffle.  PRECONDITION: corpus ids are unique and
@@ -57,41 +54,34 @@ def contamination_overlap(
     # keep_cols=[] — the benchmark side needs only text (an eval-suite
     # fingerprint frame has no reason to carry the corpus' id column)
     bench_sh = (
-        shingled(benchmark, [], text_col, shingle_n, out="__sh")
+        shingled(benchmark, [], "text", 3, out="__sh")
         .select(F.explode(F.col("__sh")).alias("__s"))
         .distinct()
     )
-    corpus_sh = shingled(corpus, [id_col], text_col, shingle_n, out="__sh").select(
-        F.col(id_col),
+    corpus_sh = shingled(corpus, ["doc_id"], "text", 3, out="__sh").select(
+        F.col("doc_id"),
         F.explode(F.array_distinct(F.col("__sh"))).alias("__s"),
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), on="__s")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    min_shared: int = 2,
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Corpus minus contaminated docs (anti-join on the flagged ids) —
     the removal composition, same shape as ``dedup.remove_near_dups``.
     The anti-join is null-safe: a flagged NULL id would never match
     a plain equi-anti-join (NULL ≠ NULL), so a contaminated doc with
     a NULL id would silently survive decontamination."""
-    flagged = contamination_overlap(
-        corpus, benchmark, id_col, text_col, shingle_n, min_shared
-    ).select(F.col(id_col).alias("__flagged_id"))
+    flagged = contamination_overlap(corpus, benchmark).select(
+        F.col("doc_id").alias("__flagged_id")
+    )
     return corpus.join(
         flagged,
-        on=F.col(id_col).eqNullSafe(F.col("__flagged_id")),
+        on=F.col("doc_id").eqNullSafe(F.col("__flagged_id")),
         how="left_anti",
     )
 
@@ -110,42 +100,29 @@ def _shingle_cte(table_expr: str, shingle_n: int, id_sel: str) -> str:
     )
 
 
-def contamination_overlap_sql(
-    corpus_expr: str,
-    bench_expr: str,
-    shingle_n: int = 3,
-    min_shared: int = 2,
-) -> str:
+def contamination_overlap_sql(corpus_expr: str, bench_expr: str) -> str:
     """DuckDB twin of :func:`contamination_overlap` over arbitrary
     table EXPRESSIONS (a table name, a parenthesized subquery, or a
     CTE name) — the reusable form compositions nest (the
     training-freeze pipeline decontaminates the post-dedup relation
     against the raw benchmark carve-out, two different tables)."""
-    corpus_sh = _shingle_cte(corpus_expr, shingle_n, "doc_id,")
-    bench_sh = _shingle_cte(bench_expr, shingle_n, "")
+    corpus_sh = _shingle_cte(corpus_expr, 3, "doc_id,")
+    bench_sh = _shingle_cte(bench_expr, 3, "")
     return f"""
 WITH corpus_sh AS ({corpus_sh}),
 bench_sh AS (SELECT DISTINCT s FROM ({bench_sh}))
 SELECT doc_id, count(*) AS n_shared
 FROM corpus_sh JOIN bench_sh USING (s)
 GROUP BY doc_id
-HAVING count(*) >= {min_shared}
+HAVING count(*) >= 2
 """
 
 
-def decontaminate_sql(
-    corpus_where: str,
-    benchmark_where: str,
-    shingle_n: int = 3,
-    min_shared: int = 2,
-    table: str = "documents",
-) -> str:
+def decontaminate_sql(corpus_where: str, benchmark_where: str) -> str:
     """DuckDB twin of :func:`contamination_overlap` with corpus and
-    benchmark carved out of ``table`` by the two WHERE predicates
+    benchmark carved out of ``documents`` by the two WHERE predicates
     (how the driver entry derives a deterministic benchmark set)."""
     return contamination_overlap_sql(
-        f"(SELECT * FROM {table} WHERE {corpus_where})",
-        f"(SELECT * FROM {table} WHERE {benchmark_where})",
-        shingle_n,
-        min_shared,
+        f"(SELECT * FROM documents WHERE {corpus_where})",
+        f"(SELECT * FROM documents WHERE {benchmark_where})",
     )

@@ -47,6 +47,18 @@ _HEX = "0123456789abcdef"
 #: widen to 64 for production collision rates.
 SIMHASH_BITS = 16
 
+#: The banded MinHash LSH shape every registered near-dup entry and
+#: its DuckDB twin run: word 3-gram shingles, 6 hashes in 3 bands of
+#: 2 rows, pairs kept at exact Jaccard >= 0.5.
+SHINGLE_N = 3
+NUM_HASHES = 6
+BANDS = 3
+THRESHOLD = 0.5
+
+#: Document-frequency cut of the exact n-gram Jaccard joins: shingles
+#: in more documents than this are boilerplate and are dropped.
+MAX_DF = 1000
+
 
 def content_hash(text: Column | str) -> Column:
     """Stable content key: ``sha2(text, 256)`` (lowercase hex in both
@@ -55,19 +67,14 @@ def content_hash(text: Column | str) -> Column:
     return F.sha2(c, 256)
 
 
-def exact_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hash_col: str = "content_hash",
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup on the content hash: one hash aggregate partitioned
-    by ``sha2(text)``, survivor = minimal ``id_col`` (deterministic,
+    by ``sha2(text)``, survivor = minimal ``doc_id`` (deterministic,
     oracle-checkable).  At 100 TB this shuffles one 64-char key plus
     the surviving row per group — never the full corpus width twice."""
-    hashed = df.withColumn(hash_col, content_hash(text_col))
+    hashed = df.withColumn("content_hash", content_hash("text"))
     return dedup_keyed_deterministic(
-        hashed, keys=[hash_col], tiebreak=[id_col]
+        hashed, keys=["content_hash"], tiebreak=["doc_id"]
     )
 
 
@@ -151,18 +158,16 @@ def near_dup_pairs_banded(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
+    num_hashes: int = NUM_HASHES,
+    threshold: float = THRESHOLD,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Banded MinHash LSH near-duplicate pair join.
 
-    1. Per doc: distinct word ``shingle_n``-gram shingles + a
+    1. Per doc: distinct word ``SHINGLE_N``-gram shingles + a
        ``num_hashes``-wide MinHash signature over them.
-    2. Split the signature into ``bands`` bands of ``num_hashes //
-       bands`` rows; each band hashes to a bucket key.  Probability a
+    2. Split the signature into ``BANDS`` bands of ``num_hashes //
+       BANDS`` rows; each band hashes to a bucket key.  Probability a
        pair shares ≥1 band ≈ 1-(1-J^r)^b — the classic S-curve.
     3. Self-join on the band key (shuffle partitioned by bucket — the
        only join, and it only ever compares within-bucket docs; no
@@ -196,7 +201,7 @@ def near_dup_pairs_banded(
     # references the staged relation three times (band explode + both
     # verification sides); at warehouse scale it's a staging table.
     base, band_keys = _banded_keys(
-        df, id_col, text_col, num_hashes, bands, shingle_n
+        df, id_col, text_col, num_hashes, BANDS, SHINGLE_N
     )
     if max_bucket is not None:
         kept = (
@@ -256,18 +261,9 @@ def verified_pairs_from(
     return verified
 
 
-def dedup_against_corpus(
-    corpus: DataFrame,
-    delta: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def dedup_against_corpus(corpus: DataFrame, delta: DataFrame) -> DataFrame:
     """INCREMENTAL-ingest dedup: admit only ``delta`` rows that are
-    neither exact nor near (banded-LSH, ≥ ``threshold``) duplicates of
+    neither exact nor near (banded-LSH, ≥ ``THRESHOLD``) duplicates of
     the existing ``corpus`` — the shape a production pipeline runs per
     ingestion batch, where re-pairing the whole corpus against itself
     (:func:`near_dup_pairs_banded`) would redo N² work for an N+δ
@@ -283,7 +279,7 @@ def dedup_against_corpus(
     as in the self-join case.  Both checks are independent
     conjunctions, so the oracle can express them against the
     full-table pair set restricted to cross pairs."""
-    dh = content_hash(text_col)
+    dh = content_hash("text")
     corpus_hashes = corpus.select(dh.alias("__h")).distinct()
     exact_ok = (
         delta.withColumn("__h", dh)
@@ -292,15 +288,15 @@ def dedup_against_corpus(
     )
 
     cbase, ckeys = _banded_keys(
-        corpus, id_col, text_col, num_hashes, bands, shingle_n
+        corpus, "doc_id", "text", NUM_HASHES, BANDS, SHINGLE_N
     )
     dbase, dkeys = _banded_keys(
-        delta, id_col, text_col, num_hashes, bands, shingle_n
+        delta, "doc_id", "text", NUM_HASHES, BANDS, SHINGLE_N
     )
     matched = match_banded_candidates(
-        dbase, dkeys, cbase, ckeys, id_col, threshold
+        dbase, dkeys, cbase, ckeys, "doc_id", THRESHOLD
     )
-    return exact_ok.join(matched, on=id_col, how="left_anti")
+    return exact_ok.join(matched, on="doc_id", how="left_anti")
 
 
 def match_banded_candidates(
@@ -383,7 +379,7 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
+    max_df: int | None = MAX_DF,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted shingle
     index — the deterministic complement to the probabilistic MinHash
@@ -456,27 +452,19 @@ def _pairs_from_postings(
     )
 
 
-def ngram_jaccard_sql(
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = 1000,
-    table: str = "documents",
-) -> str:
+def ngram_jaccard_sql(threshold: float = 0.5) -> str:
     """DuckDB twin of :func:`ngram_jaccard_pairs` (same shingling,
-    same ``max_df`` cut, same size bookkeeping)."""
+    same ``MAX_DF`` cut, same size bookkeeping)."""
     toks = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
-    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(shingle_n))
-    df_cut = (
-        f"HAVING count(*) <= {max_df}" if max_df is not None else ""
-    )
+    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(SHINGLE_N))
     return f"""
 WITH sh AS (
   SELECT DISTINCT doc_id AS id, unnest(list_transform(
-    range(len({toks}) - {shingle_n - 1}),
+    range(len({toks}) - {SHINGLE_N - 1}),
     i -> concat_ws(' ', {parts}))) AS s
-  FROM {table} WHERE len({toks}) >= {shingle_n}
+  FROM documents WHERE len({toks}) >= {SHINGLE_N}
 ), kept AS (
-  SELECT s FROM sh GROUP BY s {df_cut}
+  SELECT s FROM sh GROUP BY s HAVING count(*) <= {MAX_DF}
 ), f AS (
   SELECT sh.id, sh.s FROM sh JOIN kept USING (s)
 ), sizes AS (
@@ -498,11 +486,7 @@ WHERE round(c * 1.0 / (sa.sz + sb.sz - c), 6) >= {threshold}
 def ngram_jaccard_join(
     left: DataFrame,
     right: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
 ) -> DataFrame:
     """CROSS-CORPUS exact n-gram Jaccard join (the R-S form of
     :func:`ngram_jaccard_pairs`): pairs ``(id_l, id_r, jaccard)`` with
@@ -515,32 +499,31 @@ def ngram_jaccard_join(
     Plan: one staged posting relation PER SIDE (each side tokenizes
     once), a left×right equi-join ON THE SHINGLE — candidates are
     Σ_s df_L(s)·df_R(s), never |L|·|R| — and Jaccard from
-    pre-aggregated per-side sizes.  ``max_df`` caps a shingle's TOTAL
+    pre-aggregated per-side sizes.  ``MAX_DF`` caps a shingle's TOTAL
     occurrences across both sides (boilerplate shared across corpora
     is exactly what blows the cross join up); sizes and Jaccard are
     computed over the retained space, mirroring the self-join's
     documented semantics.  No id ordering constraint: the sides are
     different corpora (the same id may legitimately appear in both),
     so every qualifying (left, right) pair is emitted once."""
-    shl = _jaccard_postings(left, id_col, text_col, shingle_n)
-    shr = _jaccard_postings(right, id_col, text_col, shingle_n)
-    if max_df is not None:
-        kept = (
-            shl.select("__s")
-            .unionAll(shr.select("__s"))
-            .groupBy("__s")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("__s")
-        )
-        # Stage each side's FILTERED postings (r16 opt, guide §1.2):
-        # each is read twice (its size aggregate + the shared join)
-        # and ``kept`` — a full df aggregate over BOTH sides — would
-        # otherwise re-execute once per un-staged reference (the
-        # before-plan shows no planned-time exchange reuse).  Rows
-        # identical.
-        shl = stage(shl.join(kept, on="__s"))
-        shr = stage(shr.join(kept, on="__s"))
+    shl = _jaccard_postings(left, "doc_id", "text", SHINGLE_N)
+    shr = _jaccard_postings(right, "doc_id", "text", SHINGLE_N)
+    kept = (
+        shl.select("__s")
+        .unionAll(shr.select("__s"))
+        .groupBy("__s")
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .filter(F.col("__df") <= MAX_DF)
+        .select("__s")
+    )
+    # Stage each side's FILTERED postings (r16 opt, guide §1.2):
+    # each is read twice (its size aggregate + the shared join)
+    # and ``kept`` — a full df aggregate over BOTH sides — would
+    # otherwise re-execute once per un-staged reference (the
+    # before-plan shows no planned-time exchange reuse).  Rows
+    # identical.
+    shl = stage(shl.join(kept, on="__s"))
+    shr = stage(shr.join(kept, on="__s"))
     sz_l = shl.groupBy("__id").agg(F.count(F.lit(1)).alias("__szl"))
     sz_r = shr.groupBy("__id").agg(F.count(F.lit(1)).alias("__szr"))
     shared = (
@@ -568,29 +551,24 @@ def ngram_jaccard_join(
 def ngram_jaccard_join_sql(
     left_rel: str,
     right_rel: str,
-    shingle_n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> str:
     """DuckDB twin of :func:`ngram_jaccard_join` — ``left_rel`` /
     ``right_rel`` are table names or parenthesized subqueries."""
-    toks = f"regexp_split_to_array({text_col}, '[ \\t\\n\\x0B\\f\\r]+')"
-    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(shingle_n))
-    df_cut = f"HAVING count(*) <= {max_df}" if max_df is not None else ""
+    toks = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
+    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(SHINGLE_N))
     posting = (
-        f"SELECT DISTINCT {id_col} AS id, unnest(list_transform("
-        f"range(len({toks}) - {shingle_n - 1}), "
+        f"SELECT DISTINCT doc_id AS id, unnest(list_transform("
+        f"range(len({toks}) - {SHINGLE_N - 1}), "
         f"i -> concat_ws(' ', {parts}))) AS s "
-        f"FROM {{rel}} WHERE len({toks}) >= {shingle_n}"
+        f"FROM {{rel}} WHERE len({toks}) >= {SHINGLE_N}"
     )
     return f"""
 WITH shl AS ({posting.format(rel=left_rel)}
 ), shr AS ({posting.format(rel=right_rel)}
 ), kept AS (
   SELECT s FROM (SELECT s FROM shl UNION ALL SELECT s FROM shr)
-  GROUP BY s {df_cut}
+  GROUP BY s HAVING count(*) <= {MAX_DF}
 ), fl AS (SELECT shl.id, shl.s FROM shl JOIN kept USING (s)
 ), fr AS (SELECT shr.id, shr.s FROM shr JOIN kept USING (s)
 ), szl AS (SELECT id, count(*) AS sz FROM fl GROUP BY id
@@ -615,7 +593,7 @@ def ngram_jaccard_pairs_prefix(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
+    max_df: int | None = MAX_DF,
 ) -> DataFrame:
     """:func:`ngram_jaccard_pairs` with PPJoin-style PREFIX FILTERING
     (Chaudhuri et al. ICDE 2006; Xiao et al. TODS 2011) — identical
@@ -790,7 +768,7 @@ def ngram_jaccard_pairs_auto(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
+    max_df: int | None = MAX_DF,
 ) -> DataFrame:
     """Regime-selected exact n-gram Jaccard pairs: tokenize ONCE
     (staged postings shared with whichever plan wins), run the
@@ -857,10 +835,10 @@ def _hex4_to_int(hexstr: Column) -> Column:
     return out
 
 
-def simhash(text: Column | str, bits: int = SIMHASH_BITS) -> Column:
+def simhash(text: Column | str) -> Column:
     """Bit-majority SimHash over whitespace tokens.
 
-    Each token hashes to a ``bits``-bit value (md5 prefix); output bit
+    Each token hashes to a ``SIMHASH_BITS``-bit value (md5 prefix); output bit
     j is set iff the majority of token hashes have bit j set
     (``2 * sum(bit_j) > n_tokens``).  Near-identical token multisets
     produce equal (or Hamming-close) values.  Pure arithmetic over
@@ -880,17 +858,15 @@ def simhash(text: Column | str, bits: int = SIMHASH_BITS) -> Column:
         )
 
     out = F.lit(0)
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         out = out + F.when(bit_sum(j) * 2 > n, F.lit(2**j)).otherwise(F.lit(0))
     return out
 
 
-def simhash_buckets(
-    df: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS
-) -> DataFrame:
+def simhash_buckets(df: DataFrame) -> DataFrame:
     """SimHash histogram: bucket value → doc count (buckets with
     count > 1 are near-dup groups).  One hash aggregate on a
-    ``bits``-bit integer key.
+    ``SIMHASH_BITS``-bit integer key.
 
     The default 16-bit hash equals word 0 of :func:`simhash_words`, so
     it rides the staged one-md5-pass builder; other widths fall back
@@ -899,21 +875,20 @@ def simhash_buckets(
     array null-propagates while the inline/oracle coalesce folds NULL
     to bucket 0 — the three answers disagreed, and a "bucket" of
     no-content docs is a near-dup group of nothing anyway."""
-    df = df.filter(F.col(text_col).isNotNull())
-    if bits == 16:
+    df = df.filter(F.col("text").isNotNull())
+    if SIMHASH_BITS == 16:
         hashed = with_simhash_words(
-            spread(df.select(F.col(text_col))),
+            spread(df.select(F.col("text"))),
             [],
-            text_col,
+            "text",
             n_words=1,
-            bits_per_word=16,
         ).select(F.col("__w")[0].alias("simhash"))
     else:
-        hashed = df.select(simhash(text_col, bits).alias("simhash"))
+        hashed = df.select(simhash("text").alias("simhash"))
     return hashed.groupBy("simhash").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
-def simhash_sql(text_expr: str, bits: int = SIMHASH_BITS) -> str:
+def simhash_sql(text_expr: str) -> str:
     """DuckDB twin of :func:`simhash` for oracle checks — generated
     from the same constants so both engines compute bit-for-bit the
     same value."""
@@ -924,7 +899,7 @@ def simhash_sql(text_expr: str, bits: int = SIMHASH_BITS) -> str:
     val = " + ".join(digit(p, w) for p, w in ((1, 4096), (2, 256), (3, 16), (4, 1)))
     vals = f"list_transform({tok}, t -> {val})"
     terms = []
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         sum_bits = f"list_sum(list_transform({vals}, v -> (v // {2**j}) % 2))"
         terms.append(
             f"CASE WHEN 2 * coalesce({sum_bits}, 0) > len({tok}) THEN {2**j} ELSE 0 END"
@@ -941,13 +916,9 @@ def simhash_sql(text_expr: str, bits: int = SIMHASH_BITS) -> str:
 SIMHASH_WORDS = 4
 
 
-def simhash_words(
-    text: Column | str,
-    n_words: int = SIMHASH_WORDS,
-    bits_per_word: int = 16,
-) -> Column:
-    """64-bit SimHash as an array of ``n_words`` × ``bits_per_word``-bit
-    words.  Token hash = the first ``4 * n_words`` hex chars of
+def simhash_words(text: Column | str) -> Column:
+    """64-bit SimHash as an array of ``SIMHASH_WORDS`` 16-bit words.
+    Token hash = the first ``4 * SIMHASH_WORDS`` hex chars of
     ``md5(token)``; output bit j is set iff the majority of token
     hashes set bit j.
 
@@ -958,15 +929,15 @@ def simhash_words(
     """
     tks = tokens(text)
     n = F.size(tks)
-    powers = F.array(*[F.lit(2**j) for j in range(bits_per_word)])
+    powers = F.array(*[F.lit(2**j) for j in range(16)])
     words = []
-    for w in range(n_words):
+    for w in range(SIMHASH_WORDS):
         vals = F.transform(
             tks, lambda t: _hex4_to_int(F.substring(F.md5(t), 4 * w + 1, 4))
         )
         bit_sums = F.aggregate(
             vals,
-            F.array_repeat(F.lit(0), bits_per_word),
+            F.array_repeat(F.lit(0), 16),
             lambda acc, v: F.zip_with(
                 acc, powers, lambda a, p: a + F.floor(v / p).cast("int") % 2
             ),
@@ -984,18 +955,14 @@ def simhash_words(
     return F.array(*words)
 
 
-def simhash_words_sql(
-    text_expr: str,
-    n_words: int = SIMHASH_WORDS,
-    bits_per_word: int = 16,
-) -> str:
+def simhash_words_sql(text_expr: str) -> str:
     """DuckDB twin of :func:`simhash_words` — straightforward per-bit
     ``list_sum`` formulation (the oracle optimizes for obviousness, not
     speed), generated from the same constants so the words agree
     bit-for-bit."""
     tok = f"regexp_split_to_array({text_expr}, '[ \\t\\n\\x0B\\f\\r]+')"
     words = []
-    for w in range(n_words):
+    for w in range(SIMHASH_WORDS):
         digit = (
             lambda pos, wt: f"(instr('{_HEX}', substr(md5(t), {4 * w + pos}, 1)) - 1) * {wt}"
         )
@@ -1004,7 +971,7 @@ def simhash_words_sql(
         )
         vals = f"list_transform({tok}, t -> {val})"
         terms = []
-        for j in range(bits_per_word):
+        for j in range(16):
             sum_bits = f"list_sum(list_transform({vals}, v -> (v // {2**j}) % 2))"
             terms.append(
                 f"CASE WHEN 2 * coalesce({sum_bits}, 0) > len({tok}) "
@@ -1019,8 +986,6 @@ def with_simhash_words(
     keep_cols: list[str],
     text_col: str = "text",
     n_words: int = SIMHASH_WORDS,
-    bits_per_word: int = 16,
-    out: str = "__w",
 ) -> DataFrame:
     """Corpus-scale staged SimHash: tokenize and md5 ONCE per token in
     their own projections (the two-projection staging shape Catalyst
@@ -1028,7 +993,7 @@ def with_simhash_words(
     lambdas would re-hash every token once per word, the same
     subexpression-elimination trap as ``llm.text.shingled``), then
     derive each word from the bound hash column with cheap hex
-    arithmetic.  Returns ``keep_cols`` + the ``out`` word array —
+    arithmetic.  Returns ``keep_cols`` + the ``__w`` word array —
     same values as :func:`simhash_words`, one md5 pass instead of
     ``n_words``."""
     tok, hcol, ncol = "__tk_sh", "__h_sh", "__n_sh"
@@ -1038,7 +1003,7 @@ def with_simhash_words(
         F.transform(tok, F.md5).alias(hcol),
         F.size(F.col(tok)).alias(ncol),
     )
-    powers = F.array(*[F.lit(2**j) for j in range(bits_per_word)])
+    powers = F.array(*[F.lit(2**j) for j in range(16)])
     n = F.col(ncol)
     words = []
     for w in range(n_words):
@@ -1048,7 +1013,7 @@ def with_simhash_words(
         )
         bit_sums = F.aggregate(
             vals,
-            F.array_repeat(F.lit(0), bits_per_word),
+            F.array_repeat(F.lit(0), 16),
             lambda acc, v: F.zip_with(
                 acc, powers, lambda a, p: a + F.floor(v / p).cast("int") % 2
             ),
@@ -1064,7 +1029,7 @@ def with_simhash_words(
                 lambda acc, x: acc + x,
             )
         )
-    return hashed.select(*keep_cols, F.array(*words).alias(out))
+    return hashed.select(*keep_cols, F.array(*words).alias("__w"))
 
 
 def simhash_near_dup_pairs(
@@ -1072,7 +1037,6 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_words: int = SIMHASH_WORDS,
-    max_hamming: int = 3,
 ) -> DataFrame:
     """SimHash near-duplicate pairs with Hamming-band candidate
     generation — real near-dups differ by a few BITS, so exact-value
@@ -1082,11 +1046,11 @@ def simhash_near_dup_pairs(
     2. Band explode: (word_index, word_value) keys.  Pigeonhole: any
        pair within Hamming distance ``n_words - 1`` agrees exactly on
        at least one word, so recall is EXACT for
-       ``max_hamming <= n_words - 1`` (the default 3 with 4 words).
+       a Hamming cut of 3 whenever ``n_words >= 4``.
     3. Self-join on the band key (shuffle key = the band — candidates
        only ever compare within a band bucket, no all-pairs).
     4. Verify with the exact Hamming distance
-       ``Σ bit_count(xor(word_a, word_b))``; keep ``<= max_hamming``.
+       ``Σ bit_count(xor(word_a, word_b))``; keep ``<= 3``.
 
     Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``.
 
@@ -1097,9 +1061,7 @@ def simhash_near_dup_pairs(
     ``coalesce`` folds every NULL doc to words ``[0 × 4]`` → one giant
     Hamming-0 clique (caught by tests/test_null_injection.py).
     """
-    assert max_hamming <= n_words - 1, (
-        "banded recall is only exact for max_hamming <= n_words - 1"
-    )
+    assert n_words >= 4, "banded recall is only exact for Hamming 3 <= n_words - 1"
     # Staged hash (one md5 pass) + staging-registry persist: the plan
     # references this relation three times (band explode + both sides
     # of the Hamming verification join).
@@ -1140,30 +1102,24 @@ def simhash_near_dup_pairs(
         cands.join(h.withColumnsRenamed({"__id": "id_a", "__w": "__wa"}), on="id_a")
         .join(h.withColumnsRenamed({"__id": "id_b", "__w": "__wb"}), on="id_b")
         .withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("id_a", "id_b", "hamming")
     )
 
 
-def simhash_near_dup_sql(
-    n_words: int = SIMHASH_WORDS,
-    max_hamming: int = 3,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def simhash_near_dup_sql() -> str:
     """DuckDB twin of :func:`simhash_near_dup_pairs` (same words, same
     bands, same Hamming verification, same NULL-doc exclusion)."""
-    words = simhash_words_sql(text_col, n_words)
+    words = simhash_words_sql("text")
     ham = " + ".join(
-        f"bit_count(xor(ha.w[{i + 1}], hb.w[{i + 1}]))" for i in range(n_words)
+        f"bit_count(xor(ha.w[{i + 1}], hb.w[{i + 1}]))" for i in range(SIMHASH_WORDS)
     )
     return f"""
 WITH h AS (
-  SELECT {id_col} AS id, {words} AS w FROM {table}
-  WHERE {text_col} IS NOT NULL
+  SELECT doc_id AS id, {words} AS w FROM documents
+  WHERE text IS NOT NULL
 ), bands AS (
-  SELECT id, unnest(range({n_words})) AS band, unnest(w) AS wv FROM h
+  SELECT id, unnest(range({SIMHASH_WORDS})) AS band, unnest(w) AS wv FROM h
 ), cands AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM bands a JOIN bands b ON a.band = b.band AND a.wv = b.wv
@@ -1173,16 +1129,11 @@ SELECT id_a, id_b, CAST({ham} AS INTEGER) AS hamming
 FROM cands
 JOIN h ha ON ha.id = cands.id_a
 JOIN h hb ON hb.id = cands.id_b
-WHERE {ham} <= {max_hamming}
+WHERE {ham} <= 3
 """
 
 
-def near_dup_removal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **banded_kwargs,
-) -> DataFrame:
+def near_dup_removal(df: DataFrame) -> DataFrame:
     """End-to-end near-dup REMOVAL: detect pairs with the banded LSH
     join, then anti-join away every ``id_b`` (the larger id of each
     pair).  Greedy keep-smallest-id canonicalization: for a clique of
@@ -1191,9 +1142,9 @@ def near_dup_removal(
     single-pass approximation used when full connected components
     aren't worth a fixpoint loop.  One anti-join on the id — the
     corpus itself never shuffles wide."""
-    pairs = near_dup_pairs_banded(df, id_col=id_col, text_col=text_col, **banded_kwargs)
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(losers, on=id_col, how="left_anti")
+    pairs = near_dup_pairs_banded(df)
+    losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    return df.join(losers, on="doc_id", how="left_anti")
 
 
 def prefix_contained(
@@ -1251,29 +1202,24 @@ def prefix_contained(
     )
 
 
-def prefix_contained_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_chars: int = 1,
-) -> str:
+def prefix_contained_sql() -> str:
     """DuckDB twin of :func:`prefix_contained` — the identical window;
     containment via ``starts_with`` (LIKE would treat %/_ in the doc
     text as wildcards)."""
-    return f"""
+    return """
 WITH base AS (
-  SELECT {id_col}, {text_col} FROM {table}
-  WHERE {text_col} IS NOT NULL AND {text_col} <> ''
+  SELECT doc_id, text FROM documents
+  WHERE text IS NOT NULL AND text <> ''
 ), w AS (
-  SELECT {id_col}, {text_col},
-         lead({text_col}) OVER (PARTITION BY substr({text_col}, 1, {block_chars})
-           ORDER BY {text_col} NULLS FIRST, {id_col} NULLS FIRST) AS __next_text,
-         lead({id_col}) OVER (PARTITION BY substr({text_col}, 1, {block_chars})
-           ORDER BY {text_col} NULLS FIRST, {id_col} NULLS FIRST) AS __next_id
+  SELECT doc_id, text,
+         lead(text) OVER (PARTITION BY substr(text, 1, 1)
+           ORDER BY text NULLS FIRST, doc_id NULLS FIRST) AS __next_text,
+         lead(doc_id) OVER (PARTITION BY substr(text, 1, 1)
+           ORDER BY text NULLS FIRST, doc_id NULLS FIRST) AS __next_id
   FROM base
 )
-SELECT {id_col} AS contained_id, __next_id AS container_id
-FROM w WHERE starts_with(__next_text, {text_col})
+SELECT doc_id AS contained_id, __next_id AS container_id
+FROM w WHERE starts_with(__next_text, text)
 ORDER BY contained_id
 """
 
@@ -1283,8 +1229,6 @@ def band_bucket_profile(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
     max_bucket: int = 1000,
 ) -> DataFrame:
     """Degenerate-clique diagnostic for :func:`near_dup_pairs_banded`:
@@ -1299,7 +1243,7 @@ def band_bucket_profile(
     Aggregation is a single partial-agg pass over the band keys —
     no join, safe at any corpus size."""
     _, band_keys = _banded_keys(
-        df, id_col, text_col, num_hashes, bands, shingle_n
+        df, id_col, text_col, num_hashes, BANDS, SHINGLE_N
     )
     per_bucket = band_keys.groupBy("band_key").agg(
         F.count(F.lit(1)).alias("__bn")
@@ -1319,46 +1263,38 @@ def band_bucket_profile(
     )
 
 
-def band_bucket_profile_sql(
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    max_bucket: int = 1000,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def band_bucket_profile_sql() -> str:
     """DuckDB twin of :func:`band_bucket_profile` (same band constants;
     windowed/plain sums CAST to BIGINT for the driver's pandas view)."""
-    rows = num_hashes // bands
-    gram = ", ".join(f"t[i+{j + 1}]" for j in range(shingle_n))
+    rows = NUM_HASHES // BANDS
+    gram = ", ".join(f"t[i+{j + 1}]" for j in range(SHINGLE_N))
     sig_entries = ",\n    ".join(
         f"list_aggregate(list_transform(s, x -> md5('{i}:' || x)), 'min')"
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     )
     band_entries = ",\n    ".join(
         "concat_ws('|', '{b}', {parts})".format(
             b=b,
             parts=", ".join(f"g[{b * rows + r + 1}]" for r in range(rows)),
         )
-        for b in range(bands)
+        for b in range(BANDS)
     )
     return f"""
 WITH tok AS (
-  SELECT {id_col}, regexp_split_to_array({text_col}, '[ \\t\\n\\x0B\\f\\r]+') AS t FROM {table}
+  SELECT doc_id, regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+') AS t FROM documents
 ), sh AS (
-  SELECT {id_col},
-    CASE WHEN len(t) < {shingle_n} THEN CAST([] AS VARCHAR[])
-         ELSE list_distinct(list_transform(range(len(t) - {shingle_n - 1}),
+  SELECT doc_id,
+    CASE WHEN len(t) < {SHINGLE_N} THEN CAST([] AS VARCHAR[])
+         ELSE list_distinct(list_transform(range(len(t) - {SHINGLE_N - 1}),
                                            i -> concat_ws(' ', {gram})))
     END AS s
   FROM tok
 ), sig AS (
-  SELECT {id_col}, s, [
+  SELECT doc_id, s, [
     {sig_entries}] AS g
   FROM sh WHERE len(s) > 0
 ), bands0 AS (
-  SELECT {id_col}, unnest([
+  SELECT doc_id, unnest([
     {band_entries}]) AS band_key
   FROM sig
 ), per_bucket AS (
@@ -1368,40 +1304,31 @@ SELECT CAST(count(*) AS BIGINT) AS n_buckets,
        CAST(max(bn) AS BIGINT) AS max_bucket_size,
        CAST(sum(bn * (bn - 1) // 2) AS BIGINT)
          AS candidate_pairs,
-       CAST(sum(CASE WHEN bn > {max_bucket} THEN 1 ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN bn > 1000 THEN 1 ELSE 0 END) AS BIGINT)
          AS oversize_buckets,
-       CAST(sum(CASE WHEN bn > {max_bucket}
+       CAST(sum(CASE WHEN bn > 1000
                 THEN bn * (bn - 1) // 2 ELSE 0 END) AS BIGINT)
          AS oversize_pairs
 FROM per_bucket
 """
 
 
-def near_dup_banded_sql(
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_bucket: int | None = None,
-) -> str:
+def near_dup_banded_sql(table: str = "documents", max_bucket: int | None = None) -> str:
     """DuckDB twin of :func:`near_dup_pairs_banded`, generated from the
     same band/hash constants so candidate buckets and Jaccard agree
     (including the ``max_bucket`` oversize-bucket cut when set)."""
-    rows = num_hashes // bands
-    gram = ", ".join(f"t[i+{j + 1}]" for j in range(shingle_n))
+    rows = NUM_HASHES // BANDS
+    gram = ", ".join(f"t[i+{j + 1}]" for j in range(SHINGLE_N))
     sig_entries = ",\n    ".join(
         f"list_aggregate(list_transform(s, x -> md5('{i}:' || x)), 'min')"
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     )
     band_entries = ",\n    ".join(
         "concat_ws('|', '{b}', {parts})".format(
             b=b,
             parts=", ".join(f"g[{b * rows + r + 1}]" for r in range(rows)),
         )
-        for b in range(bands)
+        for b in range(BANDS)
     )
     bucket_cut = (
         " WHERE band_key IN (SELECT band_key FROM bands0 "
@@ -1411,54 +1338,46 @@ def near_dup_banded_sql(
     )
     return f"""
 WITH tok AS (
-  SELECT {id_col}, regexp_split_to_array({text_col}, '[ \\t\\n\\x0B\\f\\r]+') AS t FROM {table}
+  SELECT doc_id, regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+') AS t FROM {table}
 ), sh AS (
-  SELECT {id_col},
-    CASE WHEN len(t) < {shingle_n} THEN CAST([] AS VARCHAR[])
-         ELSE list_distinct(list_transform(range(len(t) - {shingle_n - 1}),
+  SELECT doc_id,
+    CASE WHEN len(t) < {SHINGLE_N} THEN CAST([] AS VARCHAR[])
+         ELSE list_distinct(list_transform(range(len(t) - {SHINGLE_N - 1}),
                                            i -> concat_ws(' ', {gram})))
     END AS s
   FROM tok
 ), sig AS (
-  SELECT {id_col}, s, [
+  SELECT doc_id, s, [
     {sig_entries}] AS g
   FROM sh WHERE len(s) > 0
 ), bands0 AS (
-  SELECT {id_col}, unnest([
+  SELECT doc_id, unnest([
     {band_entries}]) AS band_key
   FROM sig
 ), bands AS (
   SELECT * FROM bands0{bucket_cut}
 ), cands AS (
-  SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM bands a JOIN bands b USING (band_key)
-  WHERE a.{id_col} < b.{id_col}
+  WHERE a.doc_id < b.doc_id
 )
 SELECT id_a, id_b,
        round(len(list_intersect(sa.s, sb.s)) * 1.0
              / len(list_distinct(sa.s || sb.s)), 6) AS jaccard
 FROM cands
-JOIN sh sa ON sa.{id_col} = cands.id_a
-JOIN sh sb ON sb.{id_col} = cands.id_b
+JOIN sh sa ON sa.doc_id = cands.id_a
+JOIN sh sb ON sb.doc_id = cands.id_b
 WHERE round(len(list_intersect(sa.s, sb.s)) * 1.0
-            / len(list_distinct(sa.s || sb.s)), 6) >= {threshold}
+            / len(list_distinct(sa.s || sb.s)), 6) >= {THRESHOLD}
 """
 
 
-def near_dup_pairs_ml(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hash_tables: int = 5,
-    shingle_n: int = 3,
-    max_jaccard_distance: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
+def near_dup_pairs_ml(df: DataFrame) -> DataFrame:
     """Library formulation of the banded join: ``pyspark.ml.feature.
     MinHashLSH`` + ``approxSimilarityJoin``.
 
     Shingles → ``HashingTF`` sparse vectors → MinHash OR-amplified
-    across ``num_hash_tables`` tables; the join explodes per-table
+    across 5 tables; the join explodes per-table
     bucket keys and only compares within-bucket rows (same no-all-pairs
     guarantee as :func:`near_dup_pairs_banded`).  Returns
     ``(id_a, id_b, jaccard_dist)`` with ``id_a < id_b``.
@@ -1470,9 +1389,9 @@ def near_dup_pairs_ml(
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     sh = (
-        shingled(df, [id_col], text_col, shingle_n, out="__sh0")
+        shingled(df, ["doc_id"], "text", 3, out="__sh0")
         .select(
-            F.col(id_col).alias("__id"),
+            F.col("doc_id").alias("__id"),
             F.array_distinct(F.col("__sh0")).alias("__sh"),
         )
         .filter(F.size("__sh") > 0)
@@ -1482,12 +1401,12 @@ def near_dup_pairs_ml(
     lsh = MinHashLSH(
         inputCol="__features",
         outputCol="__hashes",
-        numHashTables=num_hash_tables,
-        seed=seed,
+        numHashTables=5,
+        seed=42,
     )
     model = lsh.fit(feats)
     joined = model.approxSimilarityJoin(
-        feats, feats, max_jaccard_distance, distCol="jaccard_dist"
+        feats, feats, 0.5, distCol="jaccard_dist"
     )
     return (
         joined.filter(F.col("datasetA.__id") < F.col("datasetB.__id"))
@@ -1610,19 +1529,19 @@ def line_dedup(
     )
 
 
-def line_dedup_sql(table: str = "documents", min_len: int = 20) -> str:
+def line_dedup_sql() -> str:
     """DuckDB twin of :func:`line_dedup` — same keep-first winner
     (row_number over (line, ordered by doc, pos)), same short-line
     exemption, same reassembly order."""
-    return f"""
+    return """
 WITH base AS (
-  SELECT doc_id, str_split(text, chr(10)) AS ls FROM {table}
+  SELECT doc_id, str_split(text, chr(10)) AS ls FROM documents
 ), lines AS (
   SELECT doc_id, i.i - 1 AS pos, ls[i.i] AS line
   FROM base, LATERAL unnest(generate_series(1, len(ls))) AS i(i)
 ), marked AS (
   SELECT doc_id, pos, line,
-         CASE WHEN length(line) >= {min_len} THEN row_number() OVER (
+         CASE WHEN length(line) >= 20 THEN row_number() OVER (
            PARTITION BY sha256(line) ORDER BY doc_id, pos
          ) ELSE 1 END AS rn
   FROM lines

@@ -232,9 +232,7 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def sample_frames(
-    media: DataFrame, n_samples: int = 4, decode: str = "fake"
-) -> DataFrame:
+def sample_frames(media: DataFrame, n_samples: int = 4) -> DataFrame:
     """Frame sampling for video-shaped media: one output row per
     sampled frame, frames chosen evenly across the item's frame count
     (deterministic — index ``i`` samples frame
@@ -258,9 +256,7 @@ def sample_frames(
             "n_samples-1) would auto-step BACKWARD for 0 and the "
             "frame-index division would hit ANSI DIVIDE_BY_ZERO)"
         )
-    feats = extract_features(media, decode=decode).select(
-        "media_id", "n_frames"
-    )
+    feats = extract_features(media).select("media_id", "n_frames")
     # explode, not posexplode: over sequence(0, n-1) the position IS
     # the element, so one exploded column serves as both sample index
     # and the numerator of the even-coverage division
@@ -433,7 +429,7 @@ def documents_as_mixed_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def mixed_media_audit_sql(table: str = "documents") -> str:
+def mixed_media_audit_sql() -> str:
     """DuckDB twin of ``media_integrity_audit(documents_as_mixed_media
     (documents))`` — the same magic splice, prefix detection (via
     ``hex(payload)`` prefix compares: DuckDB has no BLOB substring),
@@ -474,7 +470,7 @@ WITH media AS (
          CASE WHEN text IS NULL THEN NULL
               ELSE (CASE {splice} END) || encode(text) END AS payload,
          {declared} AS declared_format
-  FROM {table}
+  FROM documents
 ), hexed AS (
   SELECT *, hex(payload) AS __hex FROM media
 ), base AS (

@@ -56,25 +56,24 @@ def normalize_text_col(col: Column | str, form: str = "NFC") -> Column:
 
 def normalize_text(
     df: DataFrame,
-    col: str = "text",
     form: str = "NFC",
     out_col: str | None = None,
     flag_col: str | None = None,
 ) -> DataFrame:
-    """Normalize ``df[col]`` to ``form`` (default NFC, the web's
+    """Normalize ``df["text"]`` to ``form`` (default NFC, the web's
     canonical form).
 
-    ``out_col`` defaults to replacing ``col`` in place (the ingest
+    ``out_col`` defaults to replacing ``text`` in place (the ingest
     contract: downstream sees only normalized bytes).  ``flag_col``,
     if given, adds a boolean marking rows the normalization actually
     changed — the audit column an ingest job writes so the (tiny)
     changed slice can be re-checked without re-scanning the corpus.
     """
     tmp = "__normalize_text_tmp"
-    res = df.withColumn(tmp, normalize_text_col(col, form))
+    res = df.withColumn(tmp, normalize_text_col("text", form))
     if flag_col is not None:
         # flag against the PRE-normalization bytes (null text → False)
         res = res.withColumn(
-            flag_col, F.coalesce(F.col(tmp) != F.col(col), F.lit(False))
+            flag_col, F.coalesce(F.col(tmp) != F.col("text"), F.lit(False))
         )
-    return res.withColumn(out_col or col, F.col(tmp)).drop(tmp)
+    return res.withColumn(out_col or "text", F.col(tmp)).drop(tmp)

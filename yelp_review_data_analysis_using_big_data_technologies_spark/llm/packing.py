@@ -45,7 +45,6 @@ def pack_bins(
     docs: DataFrame,
     budget: int = 512,
     id_col: str = "doc_id",
-    text_col: str = "text",
     tokens_col: str | None = None,
     bucket_size: int = 4096,
 ) -> DataFrame:
@@ -54,7 +53,7 @@ def pack_bins(
     contiguous rule above.
 
     ``tokens_col`` supplies a precomputed token count; otherwise
-    whitespace ``token_count(text_col)`` is used.  Returns
+    whitespace ``token_count("text")`` is used.  Returns
     ``(id, n_tokens, offset_tokens, bin_id)`` — all bigint.
 
     CONTRACT (r8, pinned in tests/test_dup_ids.py): NULL ids are NOT
@@ -69,7 +68,7 @@ def pack_bins(
     n = (
         F.col(tokens_col)
         if tokens_col is not None
-        else token_count(text_col)
+        else token_count("text")
     ).cast("bigint")
     d = docs.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col),
@@ -115,20 +114,15 @@ def pack_bins(
     )
 
 
-def pack_bins_sql(
-    budget: int = 512,
-    table: str = "documents",
-    id_expr: str = "doc_id",
-    tokens_expr: str = "len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'))",
-) -> str:
+def pack_bins_sql() -> str:
     """DuckDB twin of :func:`pack_bins` — the NAIVE single-window
     prefix sum, so the oracle simultaneously checks the two-level
     decomposition against the textbook form."""
-    return f"""
+    return """
 WITH __d AS (
   -- NULL ids are not packable (r8 contract; matches the Spark plan)
-  SELECT {id_expr} AS doc_id, CAST({tokens_expr} AS BIGINT) AS n_tokens
-  FROM {table} WHERE {id_expr} IS NOT NULL
+  SELECT doc_id AS doc_id, CAST(len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')) AS BIGINT) AS n_tokens
+  FROM documents WHERE doc_id IS NOT NULL
 ), __c AS (
   -- CAST: DuckDB sum(BIGINT) yields HUGEINT, which pandas/arrow renders
   -- as float64 and the driver's dtype hash then diverges from Spark's
@@ -141,6 +135,6 @@ WITH __d AS (
   FROM __d
 )
 SELECT doc_id, n_tokens, offset_tokens,
-       CAST(offset_tokens // {budget} AS BIGINT) AS bin_id
+       CAST(offset_tokens // 512 AS BIGINT) AS bin_id
 FROM __c ORDER BY doc_id
 """

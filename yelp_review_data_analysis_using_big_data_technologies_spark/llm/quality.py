@@ -49,20 +49,15 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def repetition_profile(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-) -> DataFrame:
+def repetition_profile(df: DataFrame) -> DataFrame:
     """Per-doc repetition metrics: ``(id, n_tokens, top_token_frac,
     dup_ngram_frac)``.  See module docstring for the plan shape."""
-    base = stage(df.select(F.col(id_col), tokens(text_col).alias("__t")))
+    base = stage(df.select(F.col("doc_id"), tokens("text").alias("__t")))
     tok_stats = (
-        base.select(id_col, F.explode("__t").alias("__tok"))
-        .groupBy(id_col, "__tok")
+        base.select("doc_id", F.explode("__t").alias("__tok"))
+        .groupBy("doc_id", "__tok")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("__c").alias("n_tokens"),
             F.max("__c").alias("__top"),
@@ -73,16 +68,16 @@ def repetition_profile(
     # ``shingles_from_tokens`` under both size() calls materializes
     # every row's n-gram array twice (verified in the physical plan).
     gram_stats = base.select(
-        id_col, shingles_from_tokens("__t", shingle_n).alias("__g")
+        "doc_id", shingles_from_tokens("__t", 3).alias("__g")
     ).select(
-        id_col,
+        "doc_id",
         F.size("__g").alias("__gt"),
         F.size(F.array_distinct("__g")).alias("__gd"),
     )
     return (
-        tok_stats.join(gram_stats, on=id_col)
+        tok_stats.join(gram_stats, on="doc_id")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             F.round(F.col("__top") / F.col("n_tokens"), 6).alias(
                 "top_token_frac"
@@ -94,19 +89,17 @@ def repetition_profile(
     )
 
 
-def repetition_profile_sql(
-    shingle_n: int = 3, table: str = "documents", where: str = "TRUE"
-) -> str:
+def repetition_profile_sql() -> str:
     """DuckDB twin of :func:`repetition_profile`."""
     toks = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
-    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(shingle_n))
+    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(3))
     grams = (
-        f"CASE WHEN len({toks}) < {shingle_n} THEN [] "
-        f"ELSE list_transform(range(len({toks}) - {shingle_n - 1}), "
+        f"CASE WHEN len({toks}) < 3 THEN [] "
+        f"ELSE list_transform(range(len({toks}) - {3 - 1}), "
         f"i -> concat_ws(' ', {parts})) END"
     )
     return f"""
-WITH src AS (SELECT doc_id, text FROM {table} WHERE {where}),
+WITH src AS (SELECT doc_id, text FROM documents WHERE TRUE),
 tok AS (
   SELECT doc_id, unnest({toks}) AS t FROM src
 ), tok_stats AS (
@@ -168,19 +161,15 @@ def _n_redactions(text_col: Column | str) -> Column:
     return out
 
 
-def redact_pii(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "clean_text",
-    count_col: str = "n_redactions",
-) -> DataFrame:
-    """Mask every :data:`PII_PATTERNS` match in ``text_col`` with its
-    typed placeholder and count matches per row.  Counting runs on the
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Mask every :data:`PII_PATTERNS` match in ``text`` with its
+    typed placeholder (``clean_text``) and count matches per row
+    (``n_redactions``).  Counting runs on the
     ORIGINAL text, so overlapping pattern classes (an email whose
     domain embeds digits, say) count what the raw text contained, not
     the post-substitution string."""
-    return df.withColumn(out_col, _redacted(text_col)).withColumn(
-        count_col, _n_redactions(text_col)
+    return df.withColumn("clean_text", _redacted("text")).withColumn(
+        "n_redactions", _n_redactions("text")
     )
 
 
@@ -224,11 +213,7 @@ GOPHER_THRESHOLDS = {
 }
 
 
-def gopher_rules(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def gopher_rules(df: DataFrame) -> DataFrame:
     """Gopher quality-rule panel (Rae et al. 2021, "Scaling Language
     Models: Methods, Analysis & Insights from Training Gopher",
     §A1.1 — the public web-text filter the MassiveWeb pipeline
@@ -262,8 +247,8 @@ def gopher_rules(
     count via replace-length-diff, not regex, so the DuckDB twin is
     byte-identical.  NULL text yields NULL metrics and a FALSE flag.
     """
-    t = F.col(text_col)
-    tk = tokens(text_col)
+    t = F.col("text")
+    tk = tokens("text")
     lines = F.split(t, F.lit("\n"))
     n_words = F.size(tk)
     mean_wl = F.round(
@@ -299,7 +284,7 @@ def gopher_rules(
     )
     th = GOPHER_THRESHOLDS
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_words.alias("n_words"),
         mean_wl.alias("mean_word_len"),
         F.round(n_hashes / n_words, 6).alias("hash_word_ratio"),
@@ -326,7 +311,7 @@ def gopher_rules(
     )
 
 
-def gopher_rules_sql(table: str = "documents") -> str:
+def gopher_rules_sql() -> str:
     """DuckDB twin of :func:`gopher_rules` — same tokenizer class,
     same replace-length-diff symbol counting, same thresholds."""
     toks = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
@@ -339,7 +324,7 @@ def gopher_rules_sql(table: str = "documents") -> str:
 WITH base AS (
   SELECT doc_id, text, {toks} AS tk,
          str_split(text, chr(10)) AS lines
-  FROM {table}
+  FROM documents
 ), m AS (
   SELECT doc_id,
     len(tk) AS n_words,
@@ -388,11 +373,7 @@ C4_MIN_SENTENCES = 5
 C4_MIN_LINE_WORDS = 3
 
 
-def c4_line_filter(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def c4_line_filter(df: DataFrame) -> DataFrame:
     """The C4 line-level cleaning rules (public reference: Raffel et
     al., "Exploring the Limits of Transfer Learning with a Unified
     Text-to-Text Transformer", arXiv:1910.10683 §2.2 — the rules that
@@ -423,7 +404,7 @@ def c4_line_filter(
     scale.  Sentence count = occurrences of terminal chars in the
     KEPT text (replace-length-diff, regex-free, byte-identical
     twin)."""
-    t = F.col(text_col)
+    t = F.col("text")
     lines = F.split(t, F.lit("\n"))
 
     def line_ok(l):  # noqa: E741
@@ -450,7 +431,7 @@ def c4_line_filter(
             F.length(clean) - F.length(F.replace(clean, F.lit(c), F.lit("")))
         )
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         clean.alias("clean_text"),
         F.size(kept).alias("n_kept"),
         (F.size(lines) - F.size(kept)).alias("n_removed"),
@@ -463,7 +444,7 @@ def c4_line_filter(
         & ~F.col("clean_text").contains("}")
     )
     return out.select(
-        id_col,
+        "doc_id",
         "clean_text",
         F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
         F.coalesce(F.col("n_removed"), F.lit(0)).alias("n_removed"),
@@ -472,7 +453,7 @@ def c4_line_filter(
     )
 
 
-def c4_line_filter_sql(table: str = "documents") -> str:
+def c4_line_filter_sql() -> str:
     """DuckDB twin of :func:`c4_line_filter` — same rules, same
     replace-length-diff sentence count."""
     ws = "[ \\t\\n\\x0B\\f\\r]+"
@@ -496,7 +477,7 @@ WITH m AS (
   SELECT doc_id,
          list_filter(str_split(text, chr(10)), l -> {pred}) AS kept,
          str_split(text, chr(10)) AS ls
-  FROM {table}
+  FROM documents
 ), c AS (
   SELECT doc_id,
          array_to_string(kept, chr(10)) AS clean_text,

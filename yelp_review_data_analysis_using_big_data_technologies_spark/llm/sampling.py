@@ -110,41 +110,34 @@ def _thresholds(splits: Sequence[tuple[str, float]]) -> list[tuple[str, str]]:
     return out
 
 
-def split_assign(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    splits: Sequence[tuple[str, float]] = DEFAULT_SPLITS,
-    out: str = "split",
-) -> DataFrame:
-    """Add a deterministic train/val/test ``out`` column: the split
+def split_assign(df: DataFrame) -> DataFrame:
+    """Add a deterministic train/val/test ``split`` column: the
+    ``DEFAULT_SPLITS`` entry
     whose cumulative-weight hex threshold first exceeds the row's
     :func:`hash_bucket` (salted ``SPLIT_SALT`` — independent of the
     sampling draw).  Pure projection — no shuffle, reproducible
     across runs and engines.
 
-    A NULL ``id_col`` hashes to NULL and gets ``split = NULL`` (both
+    A NULL ``doc_id`` hashes to NULL and gets ``split = NULL`` (both
     engines agree — the SQL twin behaves identically), so such rows
     fall out of every split's accounting: ensure non-NULL ids
-    upstream, or the NULL group in a ``groupBy(out)`` is your
+    upstream, or the NULL group in a ``groupBy("split")`` is your
     missing-rows signal."""
-    b = hash_bucket(id_col, SPLIT_SALT)
+    b = hash_bucket("doc_id", SPLIT_SALT)
     expr = None
-    for name, thr in _thresholds(list(splits)):
+    for name, thr in _thresholds(DEFAULT_SPLITS):
         cond = b < F.lit(thr)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    return df.withColumn(out, expr)
+    return df.withColumn("split", expr)
 
 
-def split_case_sql(
-    id_expr: str = "doc_id",
-    splits: Sequence[tuple[str, float]] = DEFAULT_SPLITS,
-) -> str:
+def split_case_sql() -> str:
     """DuckDB ``CASE`` twin of :func:`split_assign`, generated from the
     same thresholds."""
-    b = hash_bucket_sql(id_expr, SPLIT_SALT)
+    b = hash_bucket_sql("doc_id", SPLIT_SALT)
     whens = " ".join(
         f"WHEN {b} < '{thr}' THEN '{name}'"
-        for name, thr in _thresholds(list(splits))
+        for name, thr in _thresholds(DEFAULT_SPLITS)
     )
     return f"(CASE {whens} END)"
 
@@ -153,13 +146,10 @@ def stratified_sample(
     df: DataFrame,
     strata_col: str,
     fractions: Mapping[str, float],
-    id_col: str = "doc_id",
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Keep each row iff its hash bucket falls under its stratum's
     fraction threshold — a deterministic ``sampleBy``.  Strata absent
-    from ``fractions`` fall back to ``default_fraction`` (0 drops
-    them).  The draw is salted ``SAMPLE_SALT``, independent of
+    from ``fractions`` are dropped (fraction 0).  The draw is salted ``SAMPLE_SALT``, independent of
     :func:`split_assign`.  One codegen'd filter; Catalyst pushes it to
     the scan."""
     if not fractions:
@@ -168,7 +158,7 @@ def stratified_sample(
             "would sample nothing — pass explicit zero fractions if "
             "that is the intent)"
         )
-    b = hash_bucket(id_col, SAMPLE_SALT)
+    b = hash_bucket("doc_id", SAMPLE_SALT)
     thr = None
     for stratum, frac in fractions.items():
         hexthr = _frac_hex(frac)
@@ -176,32 +166,22 @@ def stratified_sample(
         thr = (
             F.when(cond, hexthr) if thr is None else thr.when(cond, hexthr)
         )
-    thr = thr.otherwise(F.lit(_frac_hex(default_fraction)))
+    thr = thr.otherwise(F.lit(_frac_hex(0.0)))
     return df.filter(b < thr)
 
 
-def stratified_pred_sql(
-    strata_expr: str,
-    fractions: Mapping[str, float],
-    id_expr: str = "doc_id",
-    default_fraction: float = 0.0,
-) -> str:
+def stratified_pred_sql(strata_expr: str, fractions: Mapping[str, float]) -> str:
     """DuckDB predicate twin of :func:`stratified_sample`."""
-    b = hash_bucket_sql(id_expr, SAMPLE_SALT)
+    b = hash_bucket_sql("doc_id", SAMPLE_SALT)
     whens = " ".join(
         f"WHEN {strata_expr} = '{s}' THEN '{_frac_hex(f)}'"
         for s, f in fractions.items()
     )
-    dflt = _frac_hex(default_fraction)
+    dflt = _frac_hex(0.0)
     return f"({b} < (CASE {whens} ELSE '{dflt}' END))"
 
 
-def take_per_stratum(
-    df: DataFrame,
-    strata_col: str,
-    k: int,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def take_per_stratum(df: DataFrame, strata_col: str, k: int) -> DataFrame:
     """EXACTLY ``min(k, |stratum|)`` rows per stratum, deterministically:
     rows rank within their stratum by ``(salted hash, id)`` and ranks
     ≤ ``k`` survive.  The fixed-count complement of
@@ -223,7 +203,7 @@ def take_per_stratum(
     return grouped_top_k(
         df,
         partition_by=[strata_col],
-        order_by=[hash_bucket(id_col, TAKE_SALT), F.col(id_col)],
+        order_by=[hash_bucket("doc_id", TAKE_SALT), F.col("doc_id")],
         k=k,
         rank_col="__take_rk",
     )
@@ -251,11 +231,7 @@ def _hex8_to_long_sql(hex_expr: str) -> str:
     return f"({terms})"
 
 
-def weighted_priority(
-    id_col: Column | str,
-    weight_col: Column | str,
-    salt: str = WEIGHTED_SALT,
-) -> Column:
+def weighted_priority(id_col: Column | str, weight_col: Column | str) -> Column:
     """Deterministic priority-sampling key (Duffield, Lund & Thorup,
     "Priority sampling for estimation of arbitrary subset sums",
     J. ACM 54(6), 2007): ``q_i = w_i / u_i`` with ``u_i`` a uniform
@@ -273,24 +249,17 @@ def weighted_priority(
     key).  Same id + salt ⇒ same draw on every run and cluster size —
     no ``rand()``, no coordination."""
     w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    h = _hex8_to_long(hash_bucket(id_col, salt))
+    h = _hex8_to_long(hash_bucket(id_col, WEIGHTED_SALT))
     return (
         w.cast("double") * F.lit(_U32_SPAN)
         / (h.cast("double") + F.lit(1.0))
     )
 
 
-def weighted_take(
-    df: DataFrame,
-    k: int,
-    weight_col: str,
-    id_col: str = "doc_id",
-    salt: str = WEIGHTED_SALT,
-    out: str = "priority",
-) -> DataFrame:
+def weighted_take(df: DataFrame, k: int, weight_col: str) -> DataFrame:
     """Deterministic weighted sample WITHOUT replacement: the ``k``
-    rows with the largest :func:`weighted_priority`, ties broken by
-    ``id_col``.  Rows with NULL or non-positive weight are excluded
+    rows with the largest :func:`weighted_priority` of ``doc_id``,
+    ties broken by ``doc_id``.  Rows with NULL or non-positive weight are excluded
     (their priority is undefined).
 
     Scale shape: ``orderBy(...).limit(k)`` compiles to
@@ -301,22 +270,14 @@ def weighted_take(
     cannot express."""
     scored = df.filter(
         F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
-    ).withColumn(out, weighted_priority(id_col, weight_col, salt))
-    return scored.orderBy(F.desc(out), F.asc(id_col)).limit(k)
+    ).withColumn("priority", weighted_priority("doc_id", weight_col))
+    return scored.orderBy(F.desc("priority"), F.asc("doc_id")).limit(k)
 
 
-def weighted_take_sql(
-    table: str,
-    k: int,
-    weight_expr: str,
-    id_expr: str = "doc_id",
-    salt: str = WEIGHTED_SALT,
-    cols: str = "*",
-    out: str = "priority",
-) -> str:
+def weighted_take_sql(table: str, k: int, weight_expr: str, cols: str = "*") -> str:
     """DuckDB twin of :func:`weighted_take` (same salt, same hash
     decode, same correctly-rounded arithmetic)."""
-    h = _hex8_to_long_sql(hash_bucket_sql(id_expr, salt))
+    h = _hex8_to_long_sql(hash_bucket_sql("doc_id", WEIGHTED_SALT))
     # {span}e0: exponent form parses as DOUBLE in DuckDB (a bare
     # decimal literal would round through DECIMAL — see _fmt_double)
     pri = (
@@ -324,36 +285,28 @@ def weighted_take_sql(
         f"/ (CAST({h} AS DOUBLE) + 1.0))"
     )
     return (
-        f"SELECT {cols}, {pri} AS {out} FROM {table} "
+        f"SELECT {cols}, {pri} AS priority FROM {table} "
         f"WHERE {weight_expr} IS NOT NULL AND {weight_expr} > 0 "
-        f"ORDER BY {out} DESC, {id_expr} LIMIT {k}"
+        f"ORDER BY priority DESC, doc_id LIMIT {k}"
     )
 
 
-def take_per_stratum_sql(
-    table: str,
-    strata_expr: str,
-    k: int,
-    id_expr: str = "doc_id",
-    cols: str = "*",
-) -> str:
+def take_per_stratum_sql(table: str, strata_expr: str, k: int) -> str:
     """DuckDB twin of :func:`take_per_stratum` (same salt, same
     ``(hash, id)`` order).
 
-    The helper rank column is EXCLUDED from the default ``*``
-    projection (DuckDB ``* EXCLUDE``) so the twin's output schema
+    The helper rank column is EXCLUDED from the ``*`` projection (DuckDB ``* EXCLUDE``) so the twin's output schema
     matches the Spark operator, which drops it — a bare ``SELECT *``
     would leak ``__take_rk`` into any caller that compares schemas
     directly rather than aggregating over the subquery."""
-    b = hash_bucket_sql(id_expr, TAKE_SALT)
-    out_cols = "* EXCLUDE (__take_rk)" if cols.strip() == "*" else cols
+    b = hash_bucket_sql("doc_id", TAKE_SALT)
     return (
-        f"SELECT {out_cols} FROM ("
+        f"SELECT * EXCLUDE (__take_rk) FROM ("
         f"SELECT *, ROW_NUMBER() OVER (PARTITION BY {strata_expr} "
         # NULLS FIRST pins Spark's ASC default (DuckDB defaults LAST):
         # a NULL id would otherwise rank first on one engine and last
         # on the other, flipping which row survives a full stratum
-        f"ORDER BY {b} NULLS FIRST, {id_expr} NULLS FIRST) "
+        f"ORDER BY {b} NULLS FIRST, doc_id NULLS FIRST) "
         f"AS __take_rk FROM {table}"
         f") WHERE __take_rk <= {k}"
     )
@@ -457,7 +410,6 @@ def mixture_sample(
     df: DataFrame,
     weights: Mapping[str, float],
     domain_col: str = "source",
-    id_col: str = "doc_id",
     tokens: Column | str = "n_chars",
 ) -> DataFrame:
     """The rebalanced corpus itself: rows of targeted domains whose
@@ -470,7 +422,7 @@ def mixture_sample(
     thr = rates.select(F.col("domain").alias(domain_col), "__thr")
     return (
         df.join(F.broadcast(thr), on=domain_col)
-        .filter(hash_bucket(id_col, MIXTURE_SALT) < F.col("__thr"))
+        .filter(hash_bucket("doc_id", MIXTURE_SALT) < F.col("__thr"))
         .drop("__thr")
     )
 
@@ -479,7 +431,6 @@ def mixture_report(
     df: DataFrame,
     weights: Mapping[str, float],
     domain_col: str = "source",
-    id_col: str = "doc_id",
     tokens: Column | str = "n_chars",
 ) -> DataFrame:
     """Accounting panel for :func:`mixture_sample`: per domain the
@@ -490,7 +441,7 @@ def mixture_report(
     rates = mixture_rates(df, weights, domain_col=domain_col, tokens=tokens)
     d = df.filter(F.col(domain_col).isin(list(weights))).select(
         F.col(domain_col).alias("domain"),
-        F.col(id_col).alias("__id"),
+        F.col("doc_id").alias("__id"),
         tok.alias("__tok"),
     )
     kept = (
@@ -571,21 +522,20 @@ def mixture_sample_sql(
     weights: Mapping[str, float],
     table: str = "documents",
     domain_expr: str = "source",
-    id_expr: str = "doc_id",
     tokens_expr: str = "n_chars",
     cols: str = "*",
 ) -> str:
     """DuckDB twin of :func:`mixture_sample` — the kept ROWS, not the
     accounting panel: ``table`` rows of targeted domains whose salted
     hash bucket falls under the in-engine per-domain threshold.
-    ``domain_expr``/``id_expr`` must be plain columns of ``table``
+    ``domain_expr`` and ``doc_id`` must be plain columns of ``table``
     here (they qualify the outer join/filter as well as the CTE
     chain)."""
-    b = hash_bucket_sql(id_expr, MIXTURE_SALT)
+    b = hash_bucket_sql("doc_id", MIXTURE_SALT)
     return f"""
 SELECT {cols}
 FROM {table}
-JOIN (WITH {_mixture_threshold_ctes(weights, table, domain_expr, id_expr, tokens_expr)}
+JOIN (WITH {_mixture_threshold_ctes(weights, table, domain_expr, "doc_id", tokens_expr)}
       SELECT domain, __thr FROM __h) __mx
   ON {domain_expr} = __mx.domain
 WHERE {b} < __mx.__thr
@@ -596,7 +546,6 @@ def mixture_report_sql(
     weights: Mapping[str, float],
     table: str = "documents",
     domain_expr: str = "source",
-    id_expr: str = "doc_id",
     tokens_expr: str = "n_chars",
 ) -> str:
     """DuckDB twin of :func:`mixture_report` — same salt, same
@@ -605,7 +554,7 @@ def mixture_report_sql(
     clamp."""
     b = hash_bucket_sql("d.__id", MIXTURE_SALT)
     return f"""
-WITH {_mixture_threshold_ctes(weights, table, domain_expr, id_expr, tokens_expr)}, __k AS (
+WITH {_mixture_threshold_ctes(weights, table, domain_expr, "doc_id", tokens_expr)}, __k AS (
   SELECT d.domain, COUNT(*) AS kept_docs,
          CAST(SUM(d.__tok) AS BIGINT) AS kept_tokens
   FROM __d d JOIN __h h USING (domain)
@@ -694,23 +643,18 @@ def corpus_shuffle(
     )
 
 
-def corpus_shuffle_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    seed: int = 42,
-    n_shards: int = 4,
-) -> str:
+def corpus_shuffle_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`corpus_shuffle` — the textbook
     single-window rank over the same hash key."""
-    key = f"md5('{seed}:' || CAST({id_col} AS VARCHAR))"
+    key = "md5('42:' || CAST(doc_id AS VARCHAR))"
     return f"""
-SELECT {id_col},
-       CAST(row_number() OVER (ORDER BY {key}, {id_col}) - 1 AS BIGINT)
+SELECT doc_id,
+       CAST(row_number() OVER (ORDER BY {key}, doc_id) - 1 AS BIGINT)
          AS position,
-       CAST((row_number() OVER (ORDER BY {key}, {id_col}) - 1)
-            % {n_shards} AS INT) AS shard
+       CAST((row_number() OVER (ORDER BY {key}, doc_id) - 1)
+            % 4 AS INT) AS shard
 FROM {table}
-WHERE {id_col} IS NOT NULL
+WHERE doc_id IS NOT NULL
 """
 
 
@@ -718,10 +662,6 @@ def cluster_balance_sample(
     df: DataFrame,
     embeddings: DataFrame,
     n_cells: int = 8,
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tokens: Column | str = "n_tokens",
 ) -> DataFrame:
     """Semantic cluster-balanced curation (r15, the r14 verdict's #5 —
     the SemDeDup / cluster-curation shape): assign every document to
@@ -748,52 +688,44 @@ def cluster_balance_sample(
         seed_centroids,
     )
 
-    vcast = F.col(vec_col).cast("array<double>")
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(vec_id_col),
+    vcast = F.col("embedding").cast("array<double>")
+    corpus = embeddings.filter(finite_vec("embedding")).select(
+        F.col("vec_id"),
         vcast.alias("__v"),
         norm(vcast).alias("__n"),
     )
     cent_rows = _collect_centroids(
-        seed_centroids(embeddings, n_cells, id_col=vec_id_col, vec_col=vec_col)
+        seed_centroids(embeddings, n_cells)
     )
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col=vec_id_col).select(
-        F.col(vec_id_col).alias(id_col),
+    assigned = _assign_cells_literal(corpus, cent_rows).select(
+        F.col("vec_id").alias("doc_id"),
         F.col("cell_id").cast("string").alias("cluster_id"),
     )
-    tagged = df.join(assigned, on=id_col)
+    tagged = df.join(assigned, on="doc_id")
     weights = {str(c): 1.0 / n_cells for c in range(n_cells)}
     return mixture_sample(
         tagged,
         weights,
         domain_col="cluster_id",
-        id_col=id_col,
-        tokens=tokens,
+        tokens="n_tokens",
     )
 
 
-def cluster_balance_sample_sql(
-    table: str,
-    n_cells: int = 8,
-    cols: str = "*",
-    id_expr: str = "doc_id",
-    tokens_expr: str = "n_tokens",
-) -> str:
+def cluster_balance_sample_sql(table: str, cols: str = "*") -> str:
     """DuckDB twin of :func:`cluster_balance_sample` over a named
-    relation ``table`` carrying ``{id_expr}`` rows: the SHARED seeded
-    centroid/assignment SQL of the IVF twins (n_cells smallest
+    relation ``table`` carrying ``doc_id`` rows: the SHARED seeded
+    centroid/assignment SQL of the IVF twins (the 8 smallest
     vec_ids as centroids, nearest-cell by cosine with the (sim DESC,
     cell_id) tie-break) feeding :func:`mixture_sample_sql` with the
     cluster id as the mixture domain."""
     from .vectors import VEC_OK_SQL
 
-    weights = {str(c): 1.0 / n_cells for c in range(n_cells)}
+    weights = {str(c): 1.0 / 8 for c in range(8)}
     member = mixture_sample_sql(
         weights,
         table="__tagged",
         domain_expr="cluster_id",
-        id_expr=id_expr,
-        tokens_expr=tokens_expr,
+        tokens_expr="n_tokens",
         cols=cols,
     )
     return f"""
@@ -801,7 +733,7 @@ WITH __cents AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell_id,
          CAST(embedding AS DOUBLE[]) AS cv
   FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT {n_cells})
+        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT 8)
 ), __emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   WHERE {VEC_OK_SQL}
@@ -812,6 +744,6 @@ WITH __cents AS (
       ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell_id) = 1
 ), __tagged AS (
   SELECT t.*, a.cluster_id FROM {table} t
-  JOIN __assigned a ON a.vec_id = t.{id_expr}
+  JOIN __assigned a ON a.vec_id = t.doc_id
 )
 {member}"""

@@ -237,12 +237,7 @@ def remove_dup_spans(
     ).orderBy(id_col)
 
 
-def dup_spans_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    k: int = 5,
-    min_count: int = 2,
-) -> str:
+def dup_spans_sql(k: int = 5) -> str:
     """DuckDB twin of :func:`dup_spans` — same md5 shingle hashes,
     same occurrence threshold, same gaps-and-islands merge.  Shares
     the ngram family's documented quadratic-shingle twin ceiling
@@ -250,93 +245,81 @@ def dup_spans_sql(
     scale, the Spark side stays linear)."""
     return f"""
 WITH tk AS (
-  SELECT {id_col}, {_TOK_SQL} AS tk FROM {table}
-  WHERE {id_col} IS NOT NULL
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents
+  WHERE doc_id IS NOT NULL
 ), sh AS (
-  SELECT {id_col}, {_shingle_sql(k)} AS sh FROM tk
+  SELECT doc_id, {_shingle_sql(k)} AS sh FROM tk
 ), pos AS (
-  SELECT {id_col}, unnest(range(len(sh))) AS p, unnest(sh) AS s
+  SELECT doc_id, unnest(range(len(sh))) AS p, unnest(sh) AS s
   FROM sh
 ), hashed AS (
-  SELECT {id_col}, p, md5(s) AS h FROM pos
+  SELECT doc_id, p, md5(s) AS h FROM pos
 ), dup AS (
-  SELECT h FROM hashed GROUP BY h HAVING count(*) >= {min_count}
+  SELECT h FROM hashed GROUP BY h HAVING count(*) >= 2
 ), flagged AS (
-  SELECT {id_col}, p FROM hashed JOIN dup USING (h)
+  SELECT doc_id, p FROM hashed JOIN dup USING (h)
 ), isl AS (
-  SELECT {id_col}, p,
+  SELECT doc_id, p,
          CASE WHEN lag(p) OVER w IS NULL
                 OR p - lag(p) OVER w > {k} THEN 1 ELSE 0 END AS brk
   FROM flagged
-  WINDOW w AS (PARTITION BY {id_col} ORDER BY p)
+  WINDOW w AS (PARTITION BY doc_id ORDER BY p)
 ), run AS (
-  SELECT {id_col}, p,
-         sum(brk) OVER (PARTITION BY {id_col} ORDER BY p) AS island
+  SELECT doc_id, p,
+         sum(brk) OVER (PARTITION BY doc_id ORDER BY p) AS island
   FROM isl
 )
-SELECT {id_col},
+SELECT doc_id,
        CAST(min(p) AS INT) AS span_start,
        CAST(max(p) + {k} AS INT) AS span_end,
        CAST(max(p) + {k} - min(p) AS INT) AS span_tokens,
        count(*) AS n_dup_shingles
-FROM run GROUP BY {id_col}, island
-ORDER BY {id_col}, span_start
+FROM run GROUP BY doc_id, island
+ORDER BY doc_id, span_start
 """
 
 
-def remove_dup_spans_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    k: int = 5,
-    min_count: int = 2,
-    keep_first: bool = True,
-) -> str:
+def remove_dup_spans_sql(k: int = 5) -> str:
     """DuckDB twin of :func:`remove_dup_spans` — same flagged set
     (keep-first by ``row_number`` over ``(id, pos)``, the window form
     of Spark's ``min(struct)``), same islands merge, same indexed
     list_filter removal.  Shares the ngram family's quadratic-shingle
     twin ceiling."""
-    first_filter = "AND rn > 1" if keep_first else ""
-    first_col = (
-        f", row_number() OVER (PARTITION BY h ORDER BY {id_col}, p) AS rn"
-        if keep_first
-        else ""
-    )
     return f"""
 WITH tk AS (
-  SELECT {id_col}, text, {_TOK_SQL} AS tk FROM {table}
-  WHERE {id_col} IS NOT NULL
+  SELECT doc_id, text, {_TOK_SQL} AS tk FROM documents
+  WHERE doc_id IS NOT NULL
 ), sh AS (
-  SELECT {id_col}, {_shingle_sql(k)} AS sh FROM tk
+  SELECT doc_id, {_shingle_sql(k)} AS sh FROM tk
 ), pos AS (
-  SELECT {id_col}, unnest(range(len(sh))) AS p, unnest(sh) AS s
+  SELECT doc_id, unnest(range(len(sh))) AS p, unnest(sh) AS s
   FROM sh
 ), hashed AS (
-  SELECT {id_col}, p, md5(s) AS h FROM pos
+  SELECT doc_id, p, md5(s) AS h FROM pos
 ), occ AS (
-  SELECT {id_col}, p, count(*) OVER (PARTITION BY h) AS n_occ{first_col}
+  SELECT doc_id, p, count(*) OVER (PARTITION BY h) AS n_occ, row_number() OVER (PARTITION BY h ORDER BY doc_id, p) AS rn
   FROM hashed
 ), flagged AS (
-  SELECT {id_col}, p FROM occ WHERE n_occ >= {min_count} {first_filter}
+  SELECT doc_id, p FROM occ WHERE n_occ >= 2 AND rn > 1
 ), isl AS (
-  SELECT {id_col}, p,
+  SELECT doc_id, p,
          CASE WHEN lag(p) OVER w IS NULL
                 OR p - lag(p) OVER w > {k} THEN 1 ELSE 0 END AS brk
   FROM flagged
-  WINDOW w AS (PARTITION BY {id_col} ORDER BY p)
+  WINDOW w AS (PARTITION BY doc_id ORDER BY p)
 ), run AS (
-  SELECT {id_col}, p,
-         sum(brk) OVER (PARTITION BY {id_col} ORDER BY p) AS island
+  SELECT doc_id, p,
+         sum(brk) OVER (PARTITION BY doc_id ORDER BY p) AS island
   FROM isl
 ), spans AS (
-  SELECT {id_col}, min(p) AS s, max(p) + {k} AS e
-  FROM run GROUP BY {id_col}, island
+  SELECT doc_id, min(p) AS s, max(p) + {k} AS e
+  FROM run GROUP BY doc_id, island
 ), per_doc AS (
-  SELECT {id_col}, list(struct_pack(s := s, e := e)) AS spans,
+  SELECT doc_id, list(struct_pack(s := s, e := e)) AS spans,
          count(*) AS n_spans
-  FROM spans GROUP BY {id_col}
+  FROM spans GROUP BY doc_id
 )
-SELECT t.{id_col},
+SELECT t.doc_id,
        CASE WHEN t.text IS NULL THEN NULL
             -- array_to_string of an EMPTY list is already NULL in
             -- DuckDB, matching the Spark side's explicit guard
@@ -356,6 +339,6 @@ SELECT t.{id_col},
                         sp -> i >= sp.s AND i < sp.e)) = 0))
        END AS INT) AS n_tokens_removed,
        CAST(coalesce(p.n_spans, 0) AS INT) AS n_spans_removed
-FROM tk t LEFT JOIN per_doc p USING ({id_col})
-ORDER BY t.{id_col}
+FROM tk t LEFT JOIN per_doc p USING (doc_id)
+ORDER BY t.doc_id
 """

@@ -76,7 +76,7 @@ def staging_scope(tag: str) -> Iterator[None]:
         _SCOPE.tag = prev
 
 
-def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Give a CPU-heavy narrow stage at least cluster-wide parallelism.
 
     A small parquet table (one row group) scans as ONE input split, so
@@ -96,7 +96,7 @@ def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     would immediately re-fuse a byte-tiny-but-CPU-heavy stage back to
     one task, but user-specified repartition counts are exempt."""
     sc = df.sparkSession.sparkContext
-    target = min_parallelism or sc.defaultParallelism
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return stage(df.repartition(target))
@@ -122,7 +122,7 @@ def release_staging(blocking: bool = True, tag: str | None = None) -> int:
     return len(staged)
 
 
-def release_all_staging(blocking: bool = True) -> int:
+def release_all_staging() -> int:
     """Unpersist EVERY scope's staging — session/test teardown only
     (a concurrent query's cache does not survive this, by design)."""
     with _LOCK:
@@ -131,6 +131,6 @@ def release_all_staging(blocking: bool = True) -> int:
     n = 0
     for staged in groups:
         for df in staged:
-            df.unpersist(blocking=blocking)
+            df.unpersist(blocking=True)
             n += 1
     return n

@@ -36,18 +36,18 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
 
 _TOK_SQL = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
 
+#: Okapi BM25 term-saturation ``k1`` and length-normalization ``b``
+#: (the Lucene defaults) of :func:`bm25_topk` and its DuckDB twin.
+BM25_K1 = 1.2
+BM25_B = 0.75
 
-def tf_idf_top_terms(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+
+def tf_idf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-``k`` TF-IDF terms per document: ``(doc_id, term, tf,
     score, rk)`` with ``score = tf * ln(n_docs / df)`` rounded to 6
     places and ties broken by term text."""
-    toks = docs.select(id_col, F.explode(ltx.tokens(text_col)).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    toks = docs.select("doc_id", F.explode(ltx.tokens("text")).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     total = docs.agg(F.count(F.lit(1)).alias("__n"))
     scored = (
@@ -60,13 +60,13 @@ def tf_idf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("score"), F.asc("term")
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
-        .select(id_col, "term", "tf", "score", "rk")
+        .select("doc_id", "term", "tf", "score", "rk")
     )
 
 
@@ -161,25 +161,21 @@ def tfidf_cosine_pairs(
     )
 
 
-def tfidf_cosine_pairs_sql(
-    table: str = "documents",
-    min_sim: float = 0.25,
-    max_df: int = 64,
-) -> str:
+def tfidf_cosine_pairs_sql() -> str:
     """DuckDB twin of :func:`tfidf_cosine_pairs` — same df-cap, same
     idf, same kept-space L2 normalization, threshold on the rounded
     sim."""
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOK_SQL}) AS term FROM {table}
+  SELECT doc_id, unnest({_TOK_SQL}) AS term FROM documents
   WHERE doc_id IS NOT NULL
 ), tf AS (
   SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
 ), dfr AS (
   SELECT term, count(*) AS df FROM tf GROUP BY term
-  HAVING count(*) <= {max_df}
+  HAVING count(*) <= 64
 ), total AS (
-  SELECT count(*) AS n FROM {table}
+  SELECT count(*) AS n FROM documents
 ), wt AS (
   SELECT tf.doc_id, tf.term,
          tf.tf * ln(total.n * 1.0 / dfr.df) AS w
@@ -195,23 +191,23 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(count(*) AS BIGINT) AS n_shared_terms,
        round(sum(a.wn * b.wn), 6) AS sim
 FROM wn a JOIN wn b ON a.term = b.term AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING round(sum(a.wn * b.wn), 6) >= {min_sim}
+GROUP BY 1, 2 HAVING round(sum(a.wn * b.wn), 6) >= 0.25
 ORDER BY id_a, id_b
 """
 
 
-def tf_idf_top_terms_sql(k: int = 3, table: str = "documents") -> str:
+def tf_idf_top_terms_sql() -> str:
     """DuckDB twin of :func:`tf_idf_top_terms` — same formula, same
     tie-break."""
     return f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOK_SQL}) AS term FROM {table}
+  SELECT doc_id, unnest({_TOK_SQL}) AS term FROM documents
 ), tf AS (
   SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
 ), df AS (
   SELECT term, count(*) AS df FROM tf GROUP BY term
 ), total AS (
-  SELECT count(*) AS n FROM {table}
+  SELECT count(*) AS n FROM documents
 ), scored AS (
   SELECT tf.doc_id, tf.term, tf.tf,
          round(tf.tf * ln(total.n * 1.0 / df.df), 6) AS score
@@ -222,7 +218,7 @@ FROM (
   SELECT *, row_number() OVER (
     PARTITION BY doc_id ORDER BY score DESC, term ASC
   ) AS rk FROM scored
-) WHERE rk <= {k}
+) WHERE rk <= 3
 """
 
 
@@ -331,12 +327,12 @@ def bigram_lm_nll(
     )
 
 
-def bigram_lm_nll_sql(table: str = "documents") -> str:
+def bigram_lm_nll_sql() -> str:
     """DuckDB twin of :func:`bigram_lm_nll` (self-trained form) —
     same tokenizer class, same add-one smoothing, same rounding."""
     return f"""
 WITH tk AS (
-  SELECT doc_id, {_TOK_SQL} AS tk FROM {table}
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents
 ), uni AS (
   SELECT w, count(*) AS c1 FROM (SELECT unnest(tk) AS w FROM tk) GROUP BY w
 ), vocab AS (
@@ -359,17 +355,11 @@ WITH tk AS (
   FROM scored GROUP BY doc_id
 )
 SELECT t.doc_id, COALESCE(agg.n_bigrams, 0) AS n_bigrams, agg.avg_nll
-FROM {table} t LEFT JOIN agg ON t.doc_id = agg.doc_id
+FROM documents t LEFT JOIN agg ON t.doc_id = agg.doc_id
 """
 
 
-def token_chunks(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk: int = 64,
-    stride: int = 48,
-) -> DataFrame:
+def token_chunks(docs: DataFrame, chunk: int = 64, stride: int = 48) -> DataFrame:
     """Fixed-stride token windows per document: one output row per
     chunk with ``(doc_id, chunk_idx, n_chunk_tokens, chunk_hash)``.
     Chunk ``i`` covers tokens ``[i*stride, i*stride + chunk)``; the
@@ -386,27 +376,25 @@ def token_chunks(
     # per NULL doc hashing the EMPTY string (concat_ws over a null
     # array) while the SQL twin emits NULL hashes — and neither is a
     # chunk of anything.
-    staged = docs.filter(F.col(text_col).isNotNull()).select(
-        id_col, ltx.tokens(text_col).alias("__tk")
+    staged = docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", ltx.tokens("text").alias("__tk")
     )
     starts = F.sequence(
         F.lit(0), F.greatest(F.size("__tk") - 1, F.lit(0)), F.lit(stride)
     )
     exploded = staged.select(
-        id_col, "__tk", F.explode(starts).alias("__start")
+        "doc_id", "__tk", F.explode(starts).alias("__start")
     )
     win = F.slice(F.col("__tk"), F.col("__start") + 1, chunk)
     return exploded.select(
-        id_col,
+        "doc_id",
         (F.col("__start") / stride).cast("int").alias("chunk_idx"),
         F.size(win).alias("n_chunk_tokens"),
         F.md5(F.concat_ws(" ", win)).alias("chunk_hash"),
     )
 
 
-def token_chunks_sql(
-    chunk: int = 64, stride: int = 48, table: str = "documents"
-) -> str:
+def token_chunks_sql(chunk: int = 64, stride: int = 48) -> str:
     """DuckDB twin of :func:`token_chunks` (list slices are 1-based
     and inclusive-end: ``tk[s+1 : s+chunk]`` == Spark
     ``slice(tk, s+1, chunk)``); same stride contract."""
@@ -417,7 +405,7 @@ def token_chunks_sql(
         )
     return f"""
 WITH t AS (
-  SELECT doc_id, {_TOK_SQL} AS tk FROM {table} WHERE text IS NOT NULL
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents WHERE text IS NOT NULL
 )
 SELECT doc_id,
        CAST(start // {stride} AS INTEGER) AS chunk_idx,
@@ -465,12 +453,7 @@ def _feature_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def importance_weights(
-    docs: DataFrame,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def importance_weights(docs: DataFrame, target: DataFrame) -> DataFrame:
     """DSIR-style importance weights (public reference: Xie et al.,
     "Data Selection for Language Models via Importance Resampling",
     NeurIPS 2023, arXiv:2302.03169): per document the mean hashed
@@ -505,8 +488,8 @@ def importance_weights(
     # arithmetic is the dominant per-row cost, never pay it twice),
     # and the totals derive from the 1024-row models instead of a
     # second pass over either corpus.
-    raw_feats = stage(_feature_stream(docs, text_col, id_col))
-    tgt_feats = _feature_stream(target, text_col, id_col)
+    raw_feats = stage(_feature_stream(docs, "text", "doc_id"))
+    tgt_feats = _feature_stream(target, "text", "doc_id")
     cr = raw_feats.groupBy("b").agg(F.count(F.lit(1)).alias("cr"))
     ct = tgt_feats.groupBy("b").agg(F.count(F.lit(1)).alias("ct"))
     nr = cr.agg(F.sum("cr").alias("__nr"))
@@ -530,28 +513,26 @@ def importance_weights(
     )
     scored = (
         raw_feats.join(F.broadcast(lam), on="b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_feats"),
             F.round(F.avg("lam"), 6).alias("avg_logratio"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(scored, on=id_col, how="left")
+        docs.select("doc_id")
+        .join(scored, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_feats"), F.lit(0)).alias("n_feats"),
             "avg_logratio",
         )
     )
 
 
-def importance_weights_sql(
-    table: str = "documents", target_where: str = "lang = 'en'"
-) -> str:
-    """DuckDB twin of :func:`importance_weights` with
-    ``target = SELECT * FROM table WHERE target_where``."""
+def importance_weights_sql() -> str:
+    """DuckDB twin of :func:`importance_weights` over ``documents``
+    with ``target = SELECT * FROM documents WHERE lang = 'en'``."""
     digit = lambda pos, w: (  # noqa: E731
         f"(instr('{_HEX}', substr(md5(f), {pos}, 1)) - 1) * {w}"
     )
@@ -560,18 +541,18 @@ def importance_weights_sql(
         + f") % {DSIR_BUCKETS}"
     )
     feats = (
-        f"list_concat(tk, CASE WHEN len(tk) < 2 THEN [] "
-        f"ELSE list_transform(range(len(tk) - 1), "
-        f"i -> concat(tk[i + 1], ' ', tk[i + 2])) END)"
+        "list_concat(tk, CASE WHEN len(tk) < 2 THEN [] "
+        "ELSE list_transform(range(len(tk) - 1), "
+        "i -> concat(tk[i + 1], ' ', tk[i + 2])) END)"
     )
     return f"""
 WITH raw_tk AS (
-  SELECT doc_id, {_TOK_SQL} AS tk FROM {table}
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents
 ), raw_f AS (
   SELECT doc_id, {bucket} AS b
   FROM (SELECT doc_id, unnest({feats}) AS f FROM raw_tk)
 ), tgt_tk AS (
-  SELECT doc_id, {_TOK_SQL} AS tk FROM {table} WHERE {target_where}
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents WHERE lang = 'en'
 ), tgt_f AS (
   SELECT doc_id, {bucket} AS b
   FROM (SELECT doc_id, unnest({feats}) AS f FROM tgt_tk)
@@ -593,13 +574,11 @@ lam AS (
   GROUP BY raw_f.doc_id
 )
 SELECT t.doc_id, COALESCE(agg.n_feats, 0) AS n_feats, agg.avg_logratio
-FROM {table} t LEFT JOIN agg ON t.doc_id = agg.doc_id
+FROM documents t LEFT JOIN agg ON t.doc_id = agg.doc_id
 """
 
 
-def tokenized_corpus(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def tokenized_corpus(docs: DataFrame) -> DataFrame:
     """The staged ``(id, __tk)`` token relation the BM25 family
     scores over (r15 opt): one tokenize pass, cached through the
     staging registry, shared by every leg a caller wires it into.
@@ -623,10 +602,10 @@ def tokenized_corpus(
     large cluster should eager-fill (`.count()`) after staging; the
     lazy default is the measured local win.
     """
-    sid = F.col(id_col)
+    sid = F.col("doc_id")
     tk = stage(
-        docs.where(sid.isNotNull() & F.col(text_col).isNotNull()).select(
-            sid, ltx.tokens(text_col).alias("__tk")
+        docs.where(sid.isNotNull() & F.col("text").isNotNull()).select(
+            sid, ltx.tokens("text").alias("__tk")
         )
     )
     return tk
@@ -636,10 +615,6 @@ def bm25_topk(
     docs: DataFrame,
     query_terms: Sequence[str],
     k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tokenized: DataFrame | None = None,
 ) -> DataFrame:
     """Lexical TOP-K retrieval by Okapi BM25 (Robertson et al., the
@@ -648,7 +623,8 @@ def bm25_topk(
     lexical leg of :func:`rrf_fuse` hybrid retrieval).
 
     ``score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·|d|/avgdl))``
-    with the smoothed ``idf = ln(1 + (N−df+0.5)/(df+0.5))``.  N and
+    with ``k1 = BM25_K1``, ``b = BM25_B`` and the smoothed
+    ``idf = ln(1 + (N−df+0.5)/(df+0.5))``.  N and
     avgdl are corpus-wide (all docs with non-NULL text, not just
     matches); df counts docs containing the term.
 
@@ -664,7 +640,7 @@ def bm25_topk(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     terms = sorted(set(query_terms))
-    sid = F.col(id_col)
+    sid = F.col("doc_id")
     # tokenized_corpus: staged + eagerly filled (see its docstring —
     # tk feeds the broadcast stats build, the lens join side, and the
     # tf explode of ONE query; a lazy cache let those concurrently
@@ -672,7 +648,7 @@ def bm25_topk(
     tk = (
         tokenized
         if tokenized is not None
-        else tokenized_corpus(docs, id_col=id_col, text_col=text_col)
+        else tokenized_corpus(docs)
     )
     lens = tk.select(sid, F.size("__tk").cast("double").alias("__dl"))
     stats = F.broadcast(
@@ -692,7 +668,7 @@ def bm25_topk(
     )
     scored = (
         tf.join(F.broadcast(dfreq), on="__t")
-        .join(lens, on=id_col)
+        .join(lens, on="doc_id")
         .crossJoin(stats)
         .withColumn(
             "__idf",
@@ -705,14 +681,15 @@ def bm25_topk(
             "__s",
             F.col("__idf")
             * F.col("__tf")
-            * (k1 + 1.0)
+            * (BM25_K1 + 1.0)
             / (
                 F.col("__tf")
-                + k1 * (1.0 - b + b * F.col("__dl") / F.col("__avgdl"))
+                + BM25_K1
+                * (1.0 - BM25_B + BM25_B * F.col("__dl") / F.col("__avgdl"))
             ),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_terms_matched"),
         F.round(F.sum("__s"), 6).alias("bm25"),
     )
@@ -723,11 +700,11 @@ def bm25_topk(
     # query term can match a huge doc fraction, so a global window
     # over per_doc would funnel it all through one task).  The rank
     # window then runs over ≤ k rows.
-    topk = per_doc.orderBy(F.desc("bm25"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("bm25"), F.asc(id_col))
+    topk = per_doc.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
     return (
         topk.withColumn("rk", F.row_number().over(w))
-        .select(id_col, "n_terms_matched", "bm25", F.col("rk").cast("int").alias("rk"))
+        .select("doc_id", "n_terms_matched", "bm25", F.col("rk").cast("int").alias("rk"))
         .orderBy("rk")
     )
 
@@ -737,10 +714,6 @@ def prf_expansion_terms(
     query_terms: Sequence[str],
     feedback_k: int = 5,
     expand_m: int = 3,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tokenized: DataFrame | None = None,
 ) -> DataFrame:
     """Pseudo-relevance-feedback expansion terms (the RM3-lite loop
@@ -761,7 +734,7 @@ def prf_expansion_terms(
     if expand_m < 1:
         raise ValueError(f"expand_m must be >= 1, got {expand_m}")
     q0 = sorted(set(query_terms))
-    sid = F.col(id_col)
+    sid = F.col("doc_id")
     # one shared tokenize pass (r15 opt): the feedback BM25 round, the
     # feedback-term explode, the corpus-df pass, and the corpus count
     # all score over the SAME (id, __tk) relation — tokens are tokens,
@@ -769,14 +742,13 @@ def prf_expansion_terms(
     tk = (
         tokenized
         if tokenized is not None
-        else tokenized_corpus(docs, id_col=id_col, text_col=text_col)
+        else tokenized_corpus(docs)
     )
     fb_ids = bm25_topk(
-        docs, q0, k=feedback_k, k1=k1, b=b, id_col=id_col,
-        text_col=text_col, tokenized=tk,
-    ).select(id_col)
+        docs, q0, k=feedback_k, tokenized=tk,
+    ).select("doc_id")
     fb_tf = (
-        tk.join(F.broadcast(fb_ids), on=id_col, how="left_semi")
+        tk.join(F.broadcast(fb_ids), on="doc_id", how="left_semi")
         .select(F.explode("__tk").alias("term"))
         .where(~F.col("term").isin(q0))
         .groupBy("term")
@@ -824,10 +796,6 @@ def bm25_prf_topk(
     k: int = 10,
     feedback_k: int = 5,
     expand_m: int = 3,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tokenized: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 with one pseudo-relevance-feedback round: re-run
@@ -841,7 +809,7 @@ def bm25_prf_topk(
     tk = (
         tokenized
         if tokenized is not None
-        else tokenized_corpus(docs, id_col=id_col, text_col=text_col)
+        else tokenized_corpus(docs)
     )
     exp = [
         r["term"]
@@ -850,17 +818,12 @@ def bm25_prf_topk(
             query_terms,
             feedback_k=feedback_k,
             expand_m=expand_m,
-            k1=k1,
-            b=b,
-            id_col=id_col,
-            text_col=text_col,
             tokenized=tk,
         ).collect()
     ]
     expanded = sorted(set(query_terms) | set(exp))
     return bm25_topk(
-        docs, expanded, k=k, k1=k1, b=b, id_col=id_col, text_col=text_col,
-        tokenized=tk,
+        docs, expanded, k=k, tokenized=tk,
     )
 
 
@@ -870,31 +833,15 @@ def _sql_term_lits(terms: Sequence[str]) -> str:
     )
 
 
-def bm25_topk_sql(
-    query_terms: Sequence[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    table: str = "documents",
-    id_col: str = "doc_id",
-) -> str:
+def bm25_topk_sql(query_terms: Sequence[str], k: int = 10) -> str:
     """DuckDB twin of :func:`bm25_topk` — same tokenizer class, same
     smoothed idf and length normalization, same rounded tie order."""
     return _bm25_body_sql(
-        f"({_sql_term_lits(query_terms)})", k=k, k1=k1, b=b,
-        table=table, id_col=id_col,
+        f"({_sql_term_lits(query_terms)})", k=k
     )
 
 
-def _bm25_body_sql(
-    terms_src: str,
-    k: int,
-    k1: float,
-    b: float,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    pre_ctes: str = "",
-) -> str:
+def _bm25_body_sql(terms_src: str, k: int, pre_ctes: str = "") -> str:
     """Shared BM25 scoring twin over an arbitrary term source —
     ``terms_src`` is the parenthesized right side of ``t IN ...``
     (a literal list or a ``(SELECT t FROM qterms)`` subquery the
@@ -903,35 +850,35 @@ def _bm25_body_sql(
     terms = None  # kept out of the f-string below
     return f"""
 WITH {pre_ctes}tk AS (
-  SELECT {id_col}, {_TOK_SQL} AS tk FROM {table}
-  WHERE {id_col} IS NOT NULL AND text IS NOT NULL
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents
+  WHERE doc_id IS NOT NULL AND text IS NOT NULL
 ), lens AS (
-  SELECT {id_col}, CAST(len(tk) AS DOUBLE) AS dl FROM tk
+  SELECT doc_id, CAST(len(tk) AS DOUBLE) AS dl FROM tk
 ), stats AS (
   SELECT CAST(count(*) AS DOUBLE) AS n, avg(dl) AS avgdl FROM lens
 ), tf AS (
-  SELECT {id_col}, t, CAST(count(*) AS DOUBLE) AS tf
-  FROM (SELECT {id_col}, unnest(tk) AS t FROM tk)
+  SELECT doc_id, t, CAST(count(*) AS DOUBLE) AS tf
+  FROM (SELECT doc_id, unnest(tk) AS t FROM tk)
   WHERE t IN {terms_src}
-  GROUP BY {id_col}, t
+  GROUP BY doc_id, t
 ), dfreq AS (
   SELECT t, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY t
 ), scored AS (
-  SELECT tf.{id_col},
+  SELECT tf.doc_id,
          ln(1.0 + (stats.n - dfreq.df + 0.5) / (dfreq.df + 0.5))
-           * tf.tf * ({k1:.17g} + 1.0)
-           / (tf.tf + {k1:.17g} * (1.0 - {b:.17g}
-                + {b:.17g} * lens.dl / stats.avgdl)) AS s
+           * tf.tf * ({BM25_K1:.17g} + 1.0)
+           / (tf.tf + {BM25_K1:.17g} * (1.0 - {BM25_B:.17g}
+                + {BM25_B:.17g} * lens.dl / stats.avgdl)) AS s
   FROM tf
   JOIN dfreq USING (t)
-  JOIN lens USING ({id_col})
+  JOIN lens USING (doc_id)
   CROSS JOIN stats
 ), per_doc AS (
-  SELECT {id_col}, count(*) AS n_terms_matched, round(sum(s), 6) AS bm25
-  FROM scored GROUP BY {id_col}
+  SELECT doc_id, count(*) AS n_terms_matched, round(sum(s), 6) AS bm25
+  FROM scored GROUP BY doc_id
 )
-SELECT {id_col}, n_terms_matched, bm25,
-       CAST(row_number() OVER (ORDER BY bm25 DESC, {id_col}) AS INT) AS rk
+SELECT doc_id, n_terms_matched, bm25,
+       CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS INT) AS rk
 FROM per_doc
 QUALIFY rk <= {k}
 ORDER BY rk
@@ -942,32 +889,28 @@ def prf_expansion_terms_sql(
     query_terms: Sequence[str],
     feedback_k: int = 5,
     expand_m: int = 3,
-    k1: float = 1.2,
-    b: float = 0.75,
-    table: str = "documents",
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`prf_expansion_terms` — the feedback set
     from the BM25 twin, same smoothed idf · feedback-tf score, same
     rounded tie order."""
     q0 = _sql_term_lits(query_terms)
     fb = bm25_topk_sql(
-        query_terms, k=feedback_k, k1=k1, b=b, table=table, id_col=id_col
+        query_terms, k=feedback_k
     )
     return f"""
 WITH fb AS ({fb}),
 base AS (
-  SELECT {id_col}, {_TOK_SQL} AS tk FROM {table}
-  WHERE {id_col} IS NOT NULL AND text IS NOT NULL
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents
+  WHERE doc_id IS NOT NULL AND text IS NOT NULL
 ), fb_tf AS (
   SELECT t AS term, CAST(count(*) AS DOUBLE) AS tf_fb
   FROM (SELECT unnest(b2.tk) AS t FROM base b2
-        WHERE b2.{id_col} IN (SELECT {id_col} FROM fb))
+        WHERE b2.doc_id IN (SELECT doc_id FROM fb))
   WHERE t NOT IN ({q0})
   GROUP BY t
 ), cdf AS (
-  SELECT t AS term, CAST(count(DISTINCT {id_col}) AS DOUBLE) AS df
-  FROM (SELECT {id_col}, unnest(tk) AS t FROM base)
+  SELECT t AS term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
+  FROM (SELECT doc_id, unnest(tk) AS t FROM base)
   WHERE t IN (SELECT term FROM fb_tf)
   GROUP BY t
 ), n1 AS (
@@ -991,10 +934,6 @@ def bm25_prf_topk_sql(
     k: int = 10,
     feedback_k: int = 5,
     expand_m: int = 3,
-    k1: float = 1.2,
-    b: float = 0.75,
-    table: str = "documents",
-    id_col: str = "doc_id",
 ) -> str:
     """DuckDB twin of :func:`bm25_prf_topk` — the expanded query set
     is derived IN-SQL (expansion twin → union with the original
@@ -1003,10 +942,6 @@ def bm25_prf_topk_sql(
         query_terms,
         feedback_k=feedback_k,
         expand_m=expand_m,
-        k1=k1,
-        b=b,
-        table=table,
-        id_col=id_col,
     )
     q0 = _sql_term_lits(query_terms)
     pre = (
@@ -1017,20 +952,11 @@ def bm25_prf_topk_sql(
     return _bm25_body_sql(
         "(SELECT t FROM qterms)",
         k=k,
-        k1=k1,
-        b=b,
-        table=table,
-        id_col=id_col,
         pre_ctes=pre,
     )
 
 
-def vocab_coverage(
-    docs: DataFrame,
-    v: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame, v: int = 50) -> DataFrame:
     """Vocabulary-construction audit → the top-``v`` corpus tokens
     with ``(token, n, rk, share, cum_cov)`` ordered by rank — the
     BPE-prep question "how large must the vocabulary be to cover X%
@@ -1046,10 +972,10 @@ def vocab_coverage(
     DESC, token ASC), both binary collation."""
     if v < 1:
         raise ValueError(f"v must be >= 1, got {v}")
-    sid = F.col(id_col)
+    sid = F.col("doc_id")
     counts = (
-        docs.where(sid.isNotNull() & F.col(text_col).isNotNull())
-        .select(F.explode(ltx.tokens(text_col)).alias("token"))
+        docs.where(sid.isNotNull() & F.col("text").isNotNull())
+        .select(F.explode(ltx.tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1075,18 +1001,14 @@ def vocab_coverage(
     )
 
 
-def vocab_coverage_sql(
-    v: int = 50,
-    table: str = "documents",
-    id_col: str = "doc_id",
-) -> str:
+def vocab_coverage_sql() -> str:
     """DuckDB twin of :func:`vocab_coverage` — same tokenizer class,
     same (count DESC, token) tie order, window sums cast to BIGINT
     before the double division (the HUGEINT render rule)."""
     return f"""
 WITH tok AS (
-  SELECT unnest({_TOK_SQL}) AS token FROM {table}
-  WHERE {id_col} IS NOT NULL AND text IS NOT NULL
+  SELECT unnest({_TOK_SQL}) AS token FROM documents
+  WHERE doc_id IS NOT NULL AND text IS NOT NULL
 ), c AS (
   SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY token
 ), tot AS (
@@ -1095,7 +1017,7 @@ WITH tok AS (
   SELECT token, n,
          CAST(row_number() OVER (ORDER BY n DESC, token) AS INT) AS rk
   FROM c
-  QUALIFY rk <= {v}
+  QUALIFY rk <= 50
 )
 SELECT token, n, rk,
        round(n / CAST(__tot AS DOUBLE), 6) AS share,
@@ -1105,12 +1027,7 @@ FROM top CROSS JOIN tot ORDER BY rk
 """
 
 
-def rrf_fuse(
-    rankings: Sequence[DataFrame],
-    id_col: str = "doc_id",
-    rank_col: str = "rk",
-    rrf_k: int = 60,
-) -> DataFrame:
+def rrf_fuse(rankings: Sequence[DataFrame], rrf_k: int = 60) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) of N ranked
     retrievals → ``(id, rrf_score, n_lists)``: score = Σ over lists of
     ``1/(rrf_k + rank)``.  THE standard hybrid-search combiner —
@@ -1126,8 +1043,8 @@ def rrf_fuse(
         raise ValueError(f"rrf_k must be >= 1, got {rrf_k}")
     parts = [
         r.select(
-            F.col(id_col),
-            (F.lit(1.0) / (F.lit(float(rrf_k)) + F.col(rank_col).cast("double"))).alias(
+            F.col("doc_id"),
+            (F.lit(1.0) / (F.lit(float(rrf_k)) + F.col("rk").cast("double"))).alias(
                 "__c"
             ),
         )
@@ -1136,7 +1053,7 @@ def rrf_fuse(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.groupBy(id_col).agg(
+    return out.groupBy("doc_id").agg(
         F.round(F.sum("__c"), 6).alias("rrf_score"),
         F.count(F.lit(1)).alias("n_lists"),
     )

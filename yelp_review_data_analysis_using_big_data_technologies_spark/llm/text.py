@@ -13,7 +13,7 @@ whole-stage codegen and is ANSI-SQL-expressible for the DuckDB oracle.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -88,13 +88,11 @@ def punct_ratio(text: Column | str) -> Column:
     )
 
 
-def stopword_ratio(
-    text: Column | str, stopwords: Sequence[str] = STOPWORDS
-) -> Column:
+def stopword_ratio(text: Column | str) -> Column:
     """Share of whitespace tokens that are stopwords (duplicates count,
     so ``marker_hits``' filter+contains counting, not the deduping
     ``array_intersect``)."""
-    return marker_hits(text, stopwords) / F.size(tokens(text))
+    return marker_hits(text, STOPWORDS) / F.size(tokens(text))
 
 
 def marker_hits(text: Column | str, markers: Sequence[str]) -> Column:
@@ -103,48 +101,40 @@ def marker_hits(text: Column | str, markers: Sequence[str]) -> Column:
     return F.size(F.filter(tokens(text), lambda x: F.array_contains(m, x)))
 
 
-def lang_id(
-    text: Column | str,
-    markers: Mapping[str, Sequence[str]] = LANG_MARKERS,
-    unknown: str = "und",
-) -> Column:
+def lang_id(text: Column | str) -> Column:
     """Marker-word language-ID heuristic: score each candidate language
     by how many of its marker words occur, pick the max; ties resolve
-    in mapping order; all-zero → ``unknown``.
+    in ``LANG_MARKERS`` order; all-zero → ``"und"``.
 
     One pass over the token array per language — a few codegen'd
     higher-order expressions, no Python.  (On the synthetic fixture the
-    shared word pool makes most docs ``unknown``; the operator is the
+    shared word pool makes most docs ``"und"``; the operator is the
     deliverable, the corpus isn't natural language.)
     """
-    scores = {lang: marker_hits(text, mk) for lang, mk in markers.items()}
+    scores = {lang: marker_hits(text, mk) for lang, mk in LANG_MARKERS.items()}
     langs = list(scores)
     best = F.greatest(*scores.values()) if len(langs) > 1 else scores[langs[0]]
     expr = None
     for lang in langs:  # first language reaching the max wins
         cond = (scores[lang] == best) & (best > 0)
         expr = F.when(cond, F.lit(lang)) if expr is None else expr.when(cond, F.lit(lang))
-    return expr.otherwise(F.lit(unknown))
+    return expr.otherwise(F.lit("und"))
 
 
-def lang_id_sql(
-    text_expr: str,
-    markers: Mapping[str, Sequence[str]] = LANG_MARKERS,
-    unknown: str = "und",
-) -> str:
+def lang_id_sql(text_expr: str) -> str:
     """DuckDB twin of :func:`lang_id`, generated from the SAME marker
     dict so scores and tie-break order agree exactly."""
     tok = f"regexp_split_to_array({text_expr}, '[ \\t\\n\\x0B\\f\\r]+')"
     score = {}
-    for lang, mk in markers.items():
+    for lang, mk in LANG_MARKERS.items():
         lit = "[" + ", ".join(f"'{w}'" for w in mk) + "]"
         score[lang] = f"len(list_filter({tok}, t -> list_contains({lit}, t)))"
     best = "greatest(" + ", ".join(score.values()) + ")"
     cases = " ".join(
         f"WHEN {score[lang]} = {best} AND {best} > 0 THEN '{lang}'"
-        for lang in markers
+        for lang in LANG_MARKERS
     )
-    return f"(CASE {cases} ELSE '{unknown}' END)"
+    return f"(CASE {cases} ELSE 'und' END)"
 
 
 def quality_score(text: Column | str) -> Column:

@@ -59,12 +59,17 @@ EMBEDDING_DIM = 64
 #: ``[b*r, (b+1)*r)``), so it must cover ``n_bands * max n_planes``.
 POOL_PLANES = 72
 
+#: Bands of the banded cosine near-dup join (each an independent
+#: bucket key over ``n_planes`` planes of the pool), shared by the
+#: Spark operators and their DuckDB twin.
+N_BANDS = 3
 
-def _frozen_planes(n_planes: int = N_PLANES, dim: int = EMBEDDING_DIM) -> list[list[float]]:
+
+def _frozen_planes(n_planes: int = N_PLANES) -> list[list[float]]:
     import numpy as np
 
     rng = np.random.default_rng(42)
-    return [[round(float(x), 6) for x in rng.standard_normal(dim)] for _ in range(n_planes)]
+    return [[round(float(x), 6) for x in rng.standard_normal(EMBEDDING_DIM)] for _ in range(n_planes)]
 
 
 #: The seeded RNG emits plane rows sequentially, so the pool's prefix
@@ -108,7 +113,6 @@ def _rank_top_k(
     k: int,
     query_id_col: str,
     id_col: str,
-    score_col: str = "__cos",
     prune_salt: int = 64,
 ) -> DataFrame:
     """Shared retrieval epilogue: per-query ``row_number`` over
@@ -127,7 +131,7 @@ def _rank_top_k(
     bucket's top-k under the SAME (score desc, id asc) total order,
     so the union of bucket top-ks always contains the global top-k
     and the final window re-ranks identically."""
-    order = (F.desc(score_col), F.asc(id_col))
+    order = (F.desc("__cos"), F.asc(id_col))
     if prune_salt > 1:
         wl = Window.partitionBy(query_id_col, "__salt").orderBy(*order)
         scored = (
@@ -145,7 +149,7 @@ def _rank_top_k(
         .select(
             query_id_col,
             id_col,
-            F.round(score_col, 6).alias("cos_sim"),
+            F.round("__cos", 6).alias("cos_sim"),
             F.col("rk").cast("int").alias("rk"),
         )
     )
@@ -189,16 +193,15 @@ def finite_vec(c, dim: int | None = None) -> "Column":
     return ok
 
 
-def vec_ok_sql(dim: int | None = EMBEDDING_DIM, col: str = "embedding") -> str:
+def vec_ok_sql() -> str:
     """DuckDB twin of :func:`finite_vec`.  ``list_filter`` keeps
     elements whose predicate is TRUE, so the NULL-component case needs
     the explicit ``x IS NULL`` arm (a NULL predicate result is "not
     kept", which would silently ADMIT the vector)."""
-    dim_arm = f" AND len({col}) = {dim}" if dim is not None else ""
     return (
-        f"({col} IS NOT NULL{dim_arm} "
-        f"AND len(list_filter({col}, x -> x IS NULL OR NOT isfinite(x))) = 0 "
-        f"AND len(list_filter({col}, x -> x <> 0)) > 0)"
+        f"(embedding IS NOT NULL AND len(embedding) = {EMBEDDING_DIM} "
+        f"AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x))) = 0 "
+        f"AND len(list_filter(embedding, x -> x <> 0)) > 0)"
     )
 
 
@@ -340,31 +343,27 @@ def top_k_bruteforce(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Exact cosine top-k per query vector.
 
     ``broadcast(queries) × corpus`` — each corpus partition scores the
     handful of broadcast queries (|Q|·N work, no shuffle of the corpus)
     — then one window rank partitioned by query.  Ties broken by
-    ``id_col`` so the result is deterministic across engines.
+    ``vec_id`` so the result is deterministic across engines.
     """
     # NULL vectors carry no geometry: excluded on both sides (the SQL
     # twins filter identically; DuckDB's list_cosine_similarity even
     # raises on NULL input rather than propagating)
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    corpus = embeddings.filter(finite_vec("embedding")).select(
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
     )
-    q = queries.filter(finite_vec(query_vec_col)).select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("__q")
+    q = queries.filter(finite_vec("query_vec")).select(
+        F.col("query_id"), F.col("query_vec").cast("array<double>").alias("__q")
     )
     scored = corpus.crossJoin(F.broadcast(q)).withColumn(
         "__cos", cosine("__v", "__q")
     )
-    return _rank_top_k(scored, k, query_id_col, id_col)
+    return _rank_top_k(scored, k, "query_id", "vec_id")
 
 
 def mmr_rerank(
@@ -373,10 +372,6 @@ def mmr_rerank(
     k: int = 8,
     pool: int = 20,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     distributed: bool | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance re-rank (Carbonell & Goldstein,
@@ -406,19 +401,12 @@ def mmr_rerank(
         embeddings,
         queries,
         k=pool,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-        query_vec_col=query_vec_col,
-    ).select(query_id_col, id_col, F.col("cos_sim").alias("rel"))
+    ).select("query_id", "vec_id", F.col("cos_sim").alias("rel"))
     return mmr_rerank_candidates(
         rel,
         embeddings,
         k=k,
         lam=lam,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
         distributed=distributed,
     )
 
@@ -461,14 +449,11 @@ def mmr_rerank_candidates(
     embeddings: DataFrame,
     k: int = 8,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     distributed: bool | None = None,
     distributed_min_queries: int = 33,
 ) -> DataFrame:
     """Greedy MMR over PRE-SCORED candidates: ``cand_rel`` carries
-    ``(query_id_col, id_col, rel)`` where ``rel`` is any relevance
+    ``(query_id, vec_id, rel)`` where ``rel`` is any relevance
     score whose ORDER the greedy argmax should respect — exact cosine
     (:func:`mmr_rerank`), an RRF fusion score (the serving pipeline),
     a calibrated model score.  Pairwise diversity similarities are
@@ -492,22 +477,22 @@ def mmr_rerank_candidates(
         raise ValueError(f"k must be >= 1, got {k}")
     if not 0.0 <= lam <= 1.0:
         raise ValueError(f"lam must be in [0, 1], got {lam}")
-    rel = cand_rel.select(query_id_col, id_col, "rel")
-    vecs = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    rel = cand_rel.select("query_id", "vec_id", "rel")
+    vecs = embeddings.filter(finite_vec("embedding")).select(
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
     )
-    cand = stage(rel.join(vecs, on=id_col))
+    cand = stage(rel.join(vecs, on="vec_id"))
     a = cand.select(
-        query_id_col, F.col(id_col).alias("__ia"), F.col("__v").alias("__va")
+        "query_id", F.col("vec_id").alias("__ia"), F.col("__v").alias("__va")
     )
     b = cand.select(
-        query_id_col, F.col(id_col).alias("__ib"), F.col("__v").alias("__vb")
+        "query_id", F.col("vec_id").alias("__ib"), F.col("__v").alias("__vb")
     )
     pair = (
-        a.join(b, on=query_id_col)
+        a.join(b, on="query_id")
         .where(F.col("__ia") != F.col("__ib"))
         .select(
-            query_id_col,
+            "query_id",
             "__ia",
             "__ib",
             F.round(cosine("__va", "__vb"), 6).alias("__s"),
@@ -533,14 +518,14 @@ def mmr_rerank_candidates(
     # picks relation must round-trip them losslessly
     _ctypes = dict(cand.dtypes)
     sel_schema = (
-        f"{query_id_col} {_ctypes[query_id_col]}, {id_col} {_ctypes[id_col]}, "
+        f"query_id {_ctypes['query_id']}, vec_id {_ctypes['vec_id']}, "
         "rel double, mmr double, rk int"
     )
     if distributed is None:
         # bounded 1-row agg on the staged pool relation (materializes
         # the cache the collects below reuse)
         distributed = (
-            cand.select(query_id_col).distinct().count()
+            cand.select("query_id").distinct().count()
             >= distributed_min_queries
         )
     if distributed:
@@ -549,9 +534,9 @@ def mmr_rerank_candidates(
         # would force pandas to float64 and corrupt large ids), one
         # group per query, the identical greedy per group.
         rel_rows = cand.select(
-            query_id_col,
-            F.col(id_col).alias("__ia"),
-            F.col(id_col).alias("__ib"),
+            "query_id",
+            F.col("vec_id").alias("__ia"),
+            F.col("vec_id").alias("__ib"),
             F.col("rel").alias("__s"),
             F.lit(True).alias("__isrel"),
         )
@@ -560,7 +545,7 @@ def mmr_rerank_candidates(
         def _greedy_group(pdf):
             import pandas as pd
 
-            q = pdf[query_id_col].iloc[0]
+            q = pdf["query_id"].iloc[0]
             pool: dict = {}
             sims: dict = {}
             for ia, ib, s, isrel in zip(
@@ -577,8 +562,8 @@ def mmr_rerank_candidates(
             )
             return pd.DataFrame(
                 {
-                    query_id_col: [q] * len(picks),
-                    id_col: [p[0] for p in picks],
+                    "query_id": [q] * len(picks),
+                    "vec_id": [p[0] for p in picks],
                     "rel": [p[1] for p in picks],
                     "mmr": [p[2] for p in picks],
                     "rk": [p[3] for p in picks],
@@ -586,14 +571,14 @@ def mmr_rerank_candidates(
             )
 
         return (
-            u.groupBy(query_id_col)
+            u.groupBy("query_id")
             .applyInPandas(_greedy_group, schema=sel_schema)
-            .orderBy(query_id_col, "rk")
+            .orderBy("query_id", "rk")
         )
-    cand_rows = cand.select(query_id_col, id_col, "rel").collect()
+    cand_rows = cand.select("query_id", "vec_id", "rel").collect()
     sims: dict = {}
     for r in pair.collect():
-        sims[(r[query_id_col], r["__ia"], r["__ib"])] = r["__s"]
+        sims[(r["query_id"], r["__ia"], r["__ib"])] = r["__s"]
     # Duplicate (query_id, id) candidate rows keep the MAX rel (r11
     # advice): dict(pool) would keep whichever rel arrived last in
     # collect order — nondeterministic — where the pre-r11 window
@@ -602,8 +587,8 @@ def mmr_rerank_candidates(
     # candidate's best claim is its best score).
     by_query: dict = {}
     for r in cand_rows:
-        m = by_query.setdefault(r[query_id_col], {})
-        i, rl = r[id_col], r["rel"]
+        m = by_query.setdefault(r["query_id"], {})
+        i, rl = r["vec_id"], r["rel"]
         if i not in m or rl > m[i]:
             m[i] = rl
     picks = []
@@ -614,7 +599,7 @@ def mmr_rerank_candidates(
                 by_query[q], lambda a, b, _q=q: sims[(_q, a, b)], k, lam
             )
         )
-    return spark.createDataFrame(picks, sel_schema).orderBy(query_id_col, "rk")
+    return spark.createDataFrame(picks, sel_schema).orderBy("query_id", "rk")
 
 
 def mmr_greedy_sql(rel_select: str, k: int, lam: float, pre_ctes: str = "") -> str:
@@ -734,10 +719,6 @@ def top_k_ann_signlsh(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     planes: list[list[float]] = PLANES,
 ) -> DataFrame:
     """Approximate top-k: bucket corpus and queries by sign-LSH, join
@@ -747,35 +728,30 @@ def top_k_ann_signlsh(
     Recall < 1 by design; the bruteforce variant is the exactness
     baseline and the unit tests measure recall against it.
     """
-    corpus = embeddings.filter(finite_vec(vec_col)).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("__v")
+    corpus = embeddings.filter(finite_vec("embedding")).select(
+        F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
     ).withColumn("__bucket", sign_bucket("__v", planes))
-    q = queries.filter(finite_vec(query_vec_col)).select(
-        F.col(query_id_col), F.col(query_vec_col).cast("array<double>").alias("__q")
+    q = queries.filter(finite_vec("query_vec")).select(
+        F.col("query_id"), F.col("query_vec").cast("array<double>").alias("__q")
     ).withColumn("__bucket", sign_bucket("__q", planes))
     scored = corpus.join(F.broadcast(q), on="__bucket").withColumn(
         "__cos", cosine("__v", "__q")
     )
-    return _rank_top_k(scored, k, query_id_col, id_col)
+    return _rank_top_k(scored, k, "query_id", "vec_id")
 
 
-def derive_n_planes(
-    n_rows: int,
-    target_bucket_size: int = 1024,
-    min_planes: int = 4,
-    max_planes: int = 24,
-) -> int:
+def derive_n_planes(n_rows: int) -> int:
     """Planes-per-band for the banded near-dup join, derived from the
-    corpus size: ``2^planes ≈ n_rows / target_bucket_size`` keeps the
-    EXPECTED bucket population constant as the corpus grows, so the
-    within-bucket quadratic verify stays ``O(N · target)`` instead of
+    corpus size: ``2^planes ≈ n_rows / 1024`` (clamped to [4, 24])
+    keeps the EXPECTED bucket population at ~1024 as the corpus grows,
+    so the within-bucket quadratic verify stays ``O(N · 1024)`` instead of
     ``O(N²/2^planes)`` with a fixed plane count — the difference
     between a plan that survives a 100× scale-up and one that
     degenerates toward all-pairs."""
-    if n_rows <= target_bucket_size:
-        return min_planes
-    raw = math.ceil(math.log2(n_rows / target_bucket_size))
-    return max(min_planes, min(max_planes, raw))
+    if n_rows <= 1024:
+        return 4
+    raw = math.ceil(math.log2(n_rows / 1024))
+    return max(4, min(24, raw))
 
 
 def _band_planes(n_bands: int, n_planes: int) -> list[list[list[float]]]:
@@ -856,21 +832,17 @@ def _band_verified(
 def cosine_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.4,
-    n_bands: int = 3,
     n_planes: int | None = None,
-    target_bucket_size: int = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via BANDED sign-LSH:
-    ``n_bands`` independent bucket keys (band b = ``n_planes`` planes
+    ``N_BANDS`` independent bucket keys (band b = ``n_planes`` planes
     from the frozen pool), candidates = pairs sharing ≥1 band bucket
     (the MinHash S-curve applied to hyperplane LSH), verified with
     exact cosine.  Returns ``(id_a, id_b, cos_sim)`` with
     ``id_a < id_b``.
 
     Scale shape: when ``n_planes`` is None it is derived from the
-    corpus count so buckets hold ~``target_bucket_size`` vectors
+    corpus count so buckets hold ~1024 vectors
     regardless of N (one cheap ``count()`` job); the shuffle key is
     (band, bucket) and candidates only ever compare within a bucket —
     no all-pairs at any corpus size.  More bands buy recall at
@@ -878,11 +850,11 @@ def cosine_near_dup_pairs(
     """
     # NULL vectors carry no geometry: excluded before the corpus count
     # that derives the plane dial and before staging
-    embeddings = embeddings.filter(finite_vec(vec_col))
+    embeddings = embeddings.filter(finite_vec("embedding"))
     if n_planes is None:
-        n_planes = derive_n_planes(embeddings.count(), target_bucket_size)
-    bands = _band_planes(n_bands, n_planes)
-    base, keys = _band_side(embeddings, id_col, vec_col, bands)
+        n_planes = derive_n_planes(embeddings.count())
+    bands = _band_planes(N_BANDS, n_planes)
+    base, keys = _band_side(embeddings, "vec_id", "embedding", bands)
     # Candidate pairs are NOT pre-deduped across bands: deduping first
     # costs a full shuffle of the (large) candidate set, while a pair
     # sharing k>1 bands merely re-verifies k times — and only genuinely
@@ -908,11 +880,7 @@ def cosine_dedup_delta(
     corpus: DataFrame,
     delta: DataFrame,
     threshold: float = 0.4,
-    n_bands: int = 3,
     n_planes: int | None = None,
-    target_bucket_size: int = 1024,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Incremental SEMANTIC dedup at the embedding level (r12 — the
     vector analogue of ``llm.dedup.dedup_against_corpus``): keep only
@@ -927,18 +895,18 @@ def cosine_dedup_delta(
     fan-in, independent of how big the corpus has grown (the corpus
     side contributes one narrow key projection + the matched
     candidates' vectors); ``n_planes`` derives from the UNION count
-    so expected bucket population stays ~``target_bucket_size`` as
+    so expected bucket population stays ~1024 as
     the corpus grows.  Returns ``delta`` rows (original columns)
     that were admitted."""
-    corpus = corpus.filter(finite_vec(vec_col))
-    delta_ok = delta.filter(finite_vec(vec_col))
+    corpus = corpus.filter(finite_vec("embedding"))
+    delta_ok = delta.filter(finite_vec("embedding"))
     if n_planes is None:
         n_planes = derive_n_planes(
-            corpus.count() + delta_ok.count(), target_bucket_size
+            corpus.count() + delta_ok.count()
         )
-    bands = _band_planes(n_bands, n_planes)
-    base_c, keys_c = _band_side(corpus, id_col, vec_col, bands)
-    base_d, keys_d = _band_side(delta_ok, id_col, vec_col, bands)
+    bands = _band_planes(N_BANDS, n_planes)
+    base_c, keys_c = _band_side(corpus, "vec_id", "embedding", bands)
+    base_d, keys_d = _band_side(delta_ok, "vec_id", "embedding", bands)
     # R-S candidates: delta keys × corpus keys within a (band, bucket)
     # — duplicate band collisions re-verify rather than pre-dedup (the
     # cosine_near_dup_pairs rationale); the distinct runs on matched
@@ -954,32 +922,27 @@ def cosine_dedup_delta(
     matched = (
         _band_verified(cands, base_d, base_c, "__id_d", "__id_c", "__cos")
         .filter(F.col("__cos") >= threshold)
-        .select(F.col("__id_d").alias(id_col))
+        .select(F.col("__id_d").alias("vec_id"))
         .distinct()
     )
-    return delta_ok.join(matched, on=id_col, how="left_anti")
+    return delta_ok.join(matched, on="vec_id", how="left_anti")
 
 
-def cosine_near_dup_sql(
-    threshold: float = 0.4,
-    n_bands: int = 3,
-    n_planes: int = 4,
-    table: str = "embeddings",
-) -> str:
+def cosine_near_dup_sql() -> str:
     """DuckDB twin of :func:`cosine_near_dup_pairs` (same frozen plane
     pool, same band partitioning, same bucket arithmetic).  The twin
     pins an explicit ``n_planes`` — the Spark side's corpus-derived
     default is a runtime scalar the static SQL can't know."""
-    bands = _band_planes(n_bands, n_planes)
+    bands = _band_planes(N_BANDS, 4)
     bucket_list = "[" + ", ".join(
         sign_bucket_sql("embedding", planes) for planes in bands
     ) + "]"
     return f"""
 WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, {bucket_list} AS bk FROM {table}
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, {bucket_list} AS bk FROM embeddings
   WHERE {VEC_OK_SQL}
 ), k AS (
-  SELECT vec_id, unnest(range({n_bands})) AS band, unnest(bk) AS bucket FROM e
+  SELECT vec_id, unnest(range({N_BANDS})) AS band, unnest(bk) AS bucket FROM e
 ), cands AS (
   SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
   FROM k a JOIN k b ON a.band = b.band AND a.bucket = b.bucket
@@ -989,16 +952,11 @@ SELECT id_a, id_b, round(list_cosine_similarity(ea.v, eb.v), 6) AS cos_sim
 FROM cands
 JOIN e ea ON ea.vec_id = cands.id_a
 JOIN e eb ON eb.vec_id = cands.id_b
-WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= {threshold}
+WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= 0.4
 """
 
 
-def seed_centroids(
-    embeddings: DataFrame,
-    n_cells: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def seed_centroids(embeddings: DataFrame, n_cells: int = 8) -> DataFrame:
     """Deterministic IVF coarse quantizer: the ``n_cells`` corpus
     vectors with the smallest ids become the cell centroids
     (``cell_id`` densely numbered in id order).  A stand-in for a
@@ -1013,15 +971,15 @@ def seed_centroids(
     # monotonically_increasing_id) into a subplan that two broadcasts
     # re-evaluate — measured 7× slower on the IVF search it feeds.
     rows = (
-        embeddings.filter(finite_vec(vec_col))
-        .select(id_col, vec_col)
-        .orderBy(id_col)
+        embeddings.filter(finite_vec("embedding"))
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
         .limit(n_cells)
         .collect()
     )
     spark = embeddings.sparkSession
     data = [
-        (i, [float(x) for x in row[vec_col]]) for i, row in enumerate(rows)
+        (i, [float(x) for x in row["embedding"]]) for i, row in enumerate(rows)
     ]
     return spark.createDataFrame(data, "cell_id int, __c array<double>")
 
@@ -1107,10 +1065,6 @@ def top_k_ann_ivf(
     k: int = 5,
     n_cells: int = 8,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: coarse-quantize the corpus into
@@ -1130,21 +1084,21 @@ def top_k_ann_ivf(
     per-query top-k shuffle.  The round-3 shape paid three separate
     parquet scans plus an arg-max shuffle of the full vector column —
     measured 1.9× slower at sf0.1."""
-    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
+    corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
     # Deterministic seed quantizer unless centroids are given: the
     # n_cells smallest-id vectors (bounded TakeOrdered collect,
     # materializes the staged corpus).
-    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
+    cent_rows = _coarse_rows(corpus, "vec_id", n_cells, centroids)
+    assigned = _assign_cells_literal(corpus, cent_rows, "vec_id")
     probes = _probe_frame(
-        queries, cent_rows, n_probe, query_id_col, query_vec_col
+        queries, cent_rows, n_probe, "query_id", "query_vec"
     )
     scored = assigned.join(F.broadcast(probes), on="cell_id").withColumn(
         "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
     )
     # cell-bounded candidates — skip the salted prune (see
     # _raw_ranker; the prune is exact either way, this is perf)
-    return _rank_top_k(scored, k, query_id_col, id_col, prune_salt=1)
+    return _rank_top_k(scored, k, "query_id", "vec_id", prune_salt=1)
 
 
 def top_k_ann_ivf_multidial(
@@ -1153,10 +1107,6 @@ def top_k_ann_ivf_multidial(
     k: int,
     n_cells: int,
     probes: Sequence[int],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> list[tuple[int, DataFrame]]:
     """:func:`top_k_ann_ivf` swept over several ``n_probe`` dials from
     ONE corpus pass (r15 opt, the recall-profile shape): the cell
@@ -1171,11 +1121,11 @@ def top_k_ann_ivf_multidial(
     tests/test_llm.py's recall-profile checks), but the corpus is
     assigned and scored once instead of ``len(probes)`` times.
     Returns ``[(p, top_k_frame), ...]`` in the given dial order."""
-    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
-    cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
+    corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
+    cent_rows = _seed_centroid_rows(corpus, "vec_id", n_cells)
+    assigned = _assign_cells_literal(corpus, cent_rows, "vec_id")
     probes_ranked = _probe_frame(
-        queries, cent_rows, max(probes), query_id_col, query_vec_col,
+        queries, cent_rows, max(probes), "query_id", "query_vec",
         rank_col="__pr",
     )
     # score once at the widest dial; project to the rank inputs before
@@ -1186,7 +1136,7 @@ def top_k_ann_ivf_multidial(
         .withColumn(
             "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
         )
-        .select(query_id_col, id_col, "__cos", "__pr")
+        .select("query_id", "vec_id", "__cos", "__pr")
     )
     scored.count()
     return [
@@ -1195,8 +1145,8 @@ def top_k_ann_ivf_multidial(
             _rank_top_k(
                 scored.filter(F.col("__pr") <= p).drop("__pr"),
                 k,
-                query_id_col,
-                id_col,
+                "query_id",
+                "vec_id",
                 prune_salt=1,
             ),
         )
@@ -1204,13 +1154,7 @@ def top_k_ann_ivf_multidial(
     ]
 
 
-def train_centroids_kmeans(
-    embeddings: DataFrame,
-    n_cells: int = 8,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 10,
-) -> DataFrame:
+def train_centroids_kmeans(embeddings: DataFrame, n_cells: int = 8) -> DataFrame:
     """Production coarse quantizer: fit KMeans (pyspark.ml — Lloyd
     iterations run distributed) and return centroids in the same
     ``(cell_id, __c)`` shape the IVF builders take.  Not
@@ -1220,9 +1164,9 @@ def train_centroids_kmeans(
 
     spark = embeddings.sparkSession
     feats = embeddings.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(feats)
+    model = KMeans(k=n_cells, seed=42, maxIter=10).fit(feats)
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
@@ -1237,50 +1181,41 @@ def normalize(vec: Column | str) -> Column:
     return F.when(n == 0, v).otherwise(F.transform(v, lambda x: x / n))
 
 
-def centroid_distances(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def centroid_distances(embeddings: DataFrame) -> DataFrame:
     """Per-label centroid + each vector's cosine to its own centroid —
     the IVF coarse-quantizer building block, computed distributedly:
     posexplode to (label, dim, value), partial-agg means per (label,
     dim), re-assemble with ``array_agg`` ordered by dim."""
-    embeddings = embeddings.filter(finite_vec(vec_col))
+    embeddings = embeddings.filter(finite_vec("embedding"))
     exploded = embeddings.select(
-        F.col(id_col),
-        F.col(label_col),
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias("__dim", "__x"),
+        F.col("vec_id"),
+        F.col("label"),
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("__dim", "__x"),
     )
     cents = (
-        exploded.groupBy(label_col, "__dim")
+        exploded.groupBy("label", "__dim")
         .agg(F.avg("__x").alias("__m"))
-        .groupBy(label_col)
+        .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("__dim", "__m"))).alias("__dm"))
         .select(
-            label_col,
+            "label",
             F.transform("__dm", lambda s: s["__m"]).alias("__centroid"),
         )
     )
     return (
         embeddings.select(
-            id_col, label_col, F.col(vec_col).cast("array<double>").alias("__v")
+            "vec_id", "label", F.col("embedding").cast("array<double>").alias("__v")
         )
-        .join(F.broadcast(cents), on=label_col)
+        .join(F.broadcast(cents), on="label")
         .select(
-            id_col,
-            label_col,
+            "vec_id",
+            "label",
             F.round(cosine("__v", "__centroid"), 6).alias("cos_to_centroid"),
         )
     )
 
 
-def quantize_int8(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_int8(embeddings: DataFrame) -> DataFrame:
     """Scalar (per-dimension min-max) int8 quantization of an
     embedding column — the 4× storage/bandwidth shrink applied before
     ANN index builds at scale — plus its round-trip quality report.
@@ -1298,8 +1233,8 @@ def quantize_int8(
     per-row quantize/dequantize is pure codegen'd ``zip_with``; one
     corpus scan for stats, one for codes.
     """
-    base = embeddings.filter(finite_vec(vec_col)).select(
-        id_col, F.col(vec_col).cast("array<double>").alias("__v")
+    base = embeddings.filter(finite_vec("embedding")).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("__v")
     )
     stats = (
         base.select(F.posexplode("__v").alias("__dim", "__x"))
@@ -1317,7 +1252,7 @@ def quantize_int8(
         )
     )
     coded = base.crossJoin(F.broadcast(stats)).select(
-        id_col,
+        "vec_id",
         "__v",
         "__lh",
         F.zip_with(
@@ -1336,7 +1271,7 @@ def quantize_int8(
         lambda q, s: q.cast("double") / 255.0 * (s["h"] - s["l"]) + s["l"],
     )
     return coded.select(
-        id_col,
+        "vec_id",
         F.md5(
             F.concat_ws(
                 ",", F.transform("__q", lambda q: q.cast("string"))
@@ -1354,12 +1289,12 @@ def quantize_int8(
     )
 
 
-def quantize_int8_sql(table: str = "embeddings") -> str:
+def quantize_int8_sql() -> str:
     """DuckDB twin of :func:`quantize_int8` — same floor-plus-half
     codes, same dequantization error (list indices are 1-based)."""
     return f"""
 WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM {table}
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   WHERE {VEC_OK_SQL}
 ), x AS (
   SELECT unnest(v) AS val, unnest(range(len(v))) AS dim FROM e
@@ -1391,8 +1326,6 @@ def train_pq_codebooks(
     k: int = 16,
     vec_col: str = "embedding",
     seed: int = 42,
-    max_iter: int = 10,
-    train_cap: int | None = 65536,
 ) -> DataFrame:
     """Product-quantization codebooks: split each vector into ``m``
     contiguous sub-vectors and fit an independent ``k``-centroid
@@ -1419,25 +1352,24 @@ def train_pq_codebooks(
     # Codebook training does NOT need the full corpus — the standard
     # PQ recipe fits on a bounded sample and encodes everything — and
     # running Lloyd as m distributed pyspark.ml fits pays
-    # ~m·max_iter·partitions task launches of pure scheduling overhead
+    # ~m·iterations·partitions task launches of pure scheduling overhead
     # for sample-sized data (measured: the 4-subspace fit dominated
     # the whole IVF-PQ bench at sf0.1).  So: draw a DETERMINISTIC
     # capped sample (md5-hash order, no rand()), materialize it to the
-    # driver (≤ train_cap·dim doubles — 32 MB at the default cap, the
+    # driver (≤ 65536·dim doubles — 32 MB at 64 dims, the
     # same bounded-collect contract as seed_centroids), and run
     # vectorized numpy Lloyd per subspace — one collect, zero
     # per-iteration jobs, corpus encode stays fully distributed.
     embeddings = embeddings.filter(finite_vec(vec_col))
     train = embeddings.select(F.col(vec_col).cast("array<double>").alias("__tv"))
-    if train_cap is not None:
-        train = (
-            train.withColumn(
-                "__hb", F.substring(F.md5(F.to_json(F.struct("__tv"))), 1, 8)
-            )
-            .orderBy("__hb", "__tv")
-            .limit(train_cap)
-            .drop("__hb")
+    train = (
+        train.withColumn(
+            "__hb", F.substring(F.md5(F.to_json(F.struct("__tv"))), 1, 8)
         )
+        .orderBy("__hb", "__tv")
+        .limit(65536)
+        .drop("__hb")
+    )
     X_full = np.array([r["__tv"] for r in train.collect()], dtype=np.float64)
     if X_full.size == 0:
         raise ValueError("empty training set for PQ codebooks")
@@ -1445,7 +1377,7 @@ def train_pq_codebooks(
     rows = []
     for j in range(m):
         X = np.ascontiguousarray(X_full[:, j * sub : (j + 1) * sub])
-        C = _lloyd(X, k, seed=seed + j, max_iter=max_iter)
+        C = _lloyd(X, k, seed=seed + j, max_iter=10)
         rows += [
             (j, c, [float(x) for x in cent]) for c, cent in enumerate(C)
         ]
@@ -1495,12 +1427,7 @@ def _sql_matrix(vecs: list[list[float]]) -> str:
     return "array(" + ", ".join(_sql_vector(v) for v in vecs) + ")"
 
 
-def pq_encode_mse(
-    embeddings: DataFrame,
-    codebooks: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode_mse(embeddings: DataFrame, codebooks: DataFrame) -> DataFrame:
     """Encode every vector to its ``m`` nearest-sub-centroid codes and
     report reconstruction quality: ``(id, pq_codes array<int>, mse)``.
 
@@ -1515,11 +1442,11 @@ def pq_encode_mse(
     the same projection.
     """
     by_sub = _collect_codebooks(codebooks)
-    vcast = F.col(vec_col).cast("array<double>")
-    base = embeddings.select(F.col(id_col), vcast.alias("__v"))
+    vcast = F.col("embedding").cast("array<double>")
+    base = embeddings.select(F.col("vec_id"), vcast.alias("__v"))
 
     coded = base.select(
-        id_col, "__v", _pq_codes_expr("__v", by_sub).alias("pq_codes")
+        "vec_id", "__v", _pq_codes_expr("__v", by_sub).alias("pq_codes")
     )
     recon = (
         "concat("
@@ -1534,26 +1461,17 @@ def pq_encode_mse(
         f"round(aggregate(zip_with(__v, {recon}, (v, r) -> (v - r) * (v - r)), "
         "cast(0.0 AS DOUBLE), (acc, x) -> acc + x) / size(__v), 9)"
     )
-    return coded.select(id_col, "pq_codes", mse.alias("mse"))
+    return coded.select("vec_id", "pq_codes", mse.alias("mse"))
 
 
-def quantize_pq(
-    embeddings: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
+def quantize_pq(embeddings: DataFrame, m: int = 4, k: int = 16) -> DataFrame:
     """Train-and-encode composition: per-subspace KMeans codebooks →
     literal-inlined encode + reconstruction MSE.  Rows-only for the
     driver (KMeans cell boundaries are engine-specific); quality is
     pinned by unit tests (exact reconstruction on a ≤k-distinct
     corpus, MSE ≪ per-dim variance on the synthetic embeddings)."""
-    cb = train_pq_codebooks(
-        embeddings, m=m, k=k, vec_col=vec_col, seed=seed
-    )
-    return pq_encode_mse(embeddings, cb, id_col=id_col, vec_col=vec_col)
+    cb = train_pq_codebooks(embeddings, m=m, k=k)
+    return pq_encode_mse(embeddings, cb)
 
 
 def _collect_codebooks(codebooks: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
@@ -1602,13 +1520,8 @@ def top_k_ann_ivfpq(
     m: int = 4,
     k_codes: int = 16,
     rerank: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF-PQ approximate top-k with asymmetric distance computation
     and exact re-ranking — the FAISS ``IVFADC`` design (Jégou et al.,
@@ -1646,10 +1559,10 @@ def top_k_ann_ivfpq(
     recall@k vs :func:`top_k_bruteforce` is pinned by unit tests.
     """
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, m, k_codes, id_col, vec_col,
-        query_id_col, query_vec_col, centroids, codebooks, seed,
+        embeddings, queries, n_cells, n_probe, m, k_codes, "vec_id", "embedding",
+        "query_id", "query_vec", centroids, codebooks, 42,
     )
-    return _adc_rank_joined(cand, corpus, k, rerank, id_col, query_id_col)
+    return _adc_rank_joined(cand, corpus, k, rerank, "vec_id", "query_id")
 
 
 def _ivfpq_in_memory(
@@ -1814,15 +1727,9 @@ def top_k_ann_ivfpq_multirerank(
     reranks: Sequence[int],
     n_cells: int = 8,
     n_probe: int = 2,
-    m: int = 4,
     k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
-    seed: int = 42,
 ) -> list[tuple[int, DataFrame]]:
     """:func:`top_k_ann_ivfpq` swept over several ``rerank`` dials
     from ONE encode + ADC + exact-re-rank pass (r15 opt, the
@@ -1835,15 +1742,15 @@ def top_k_ann_ivfpq_multirerank(
     :func:`top_k_ann_ivfpq` call's (same ADC table, same cosine, same
     final tie-break).  Returns ``[(r, top_k_frame), ...]``."""
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, m, k_codes, id_col, vec_col,
-        query_id_col, query_vec_col, centroids, codebooks, seed,
+        embeddings, queries, n_cells, n_probe, 4, k_codes, "vec_id", "embedding",
+        "query_id", "query_vec", centroids, codebooks, 42,
     )
     # _adc_rank_joined's epilogue at the widest cut, keeping __crk
     candidates = _adc_candidates(
-        cand, max(reranks) * k, id_col, query_id_col
+        cand, max(reranks) * k, "vec_id", "query_id"
     )
     rer = stage(
-        candidates.join(corpus, on=id_col).withColumn(
+        candidates.join(corpus, on="vec_id").withColumn(
             "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
         )
     )
@@ -1854,8 +1761,8 @@ def top_k_ann_ivfpq_multirerank(
             _rank_top_k(
                 rer.filter(F.col("__crk") <= r * k),
                 k,
-                query_id_col,
-                id_col,
+                "query_id",
+                "vec_id",
             ),
         )
         for r in reranks
@@ -1881,11 +1788,6 @@ def _residual_frame(
 def train_ivfpq_params(
     embeddings: DataFrame,
     n_cells: int = 8,
-    m: int = 4,
-    k_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
     """Train the IVF-PQ quantizer ONCE — ``(centroids, codebooks)``
     DataFrames for reuse across multiple :func:`top_k_ann_ivfpq`
@@ -1895,14 +1797,12 @@ def train_ivfpq_params(
     codebooks every time (the r12 recall-curve entry measured ~40% of
     its wall clock in redundant trainings)."""
     spark = embeddings.sparkSession
-    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
-    cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
+    corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
+    cent_rows = _seed_centroid_rows(corpus, "vec_id", n_cells)
     resid = _residual_frame(
-        _assign_cells_literal(corpus, cent_rows, id_col), cent_rows, id_col
+        _assign_cells_literal(corpus, cent_rows, "vec_id"), cent_rows, "vec_id"
     )
-    codebooks = train_pq_codebooks(
-        resid, m=m, k=k_codes, vec_col="__r", seed=seed
-    )
+    codebooks = train_pq_codebooks(resid, vec_col="__r")
     centroids = spark.createDataFrame(
         cent_rows, "cell_id int, __c array<double>"
     )
@@ -2208,7 +2108,6 @@ def build_ivfpq_index(
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
-    seed: int = 42,
     meta_cols: Sequence[str] = (),
 ) -> IndexParams:
     """Materialize a PERSISTED IVF-PQ index (r12, the r11 verdict's
@@ -2257,9 +2156,7 @@ def build_ivfpq_index(
         )
     )
     if codebooks is None:
-        codebooks = train_pq_codebooks(
-            resid, m=m, k=k_codes, vec_col="__r", seed=seed
-        )
+        codebooks = train_pq_codebooks(resid, m=m, k=k_codes, vec_col="__r")
     params = IndexParams(cent_rows, _collect_codebooks(codebooks))
     resid.select(
         id_col,
@@ -2406,9 +2303,7 @@ def add_to_ivfpq_index(
     _merge(_PQ, delta, path, id_col, vec_col, params)
 
 
-def delete_from_ivf_index(
-    delta_ids: DataFrame, path: str, id_col: str = "vec_id"
-) -> None:
+def delete_from_ivf_index(delta_ids: DataFrame, path: str) -> None:
     """Erasure from a persisted ANN index (r13): remove every stored
     row whose id appears in ``delta_ids`` — the right-to-be-forgotten
     shape at the INDEX layer.  Deleting a user from the corpus table
@@ -2425,7 +2320,7 @@ def delete_from_ivf_index(
     lineage cut).  Idempotent: re-deleting absent ids touches
     nothing."""
     spark = delta_ids.sparkSession
-    ids = delta_ids.select(id_col).distinct().persist()
+    ids = delta_ids.select("vec_id").distinct().persist()
     try:
         for codec in (_RAW, _PQ):
             p = f"{path}/{codec.rel}"
@@ -2440,7 +2335,7 @@ def delete_from_ivf_index(
                 # forget — treat as already-empty instead of failing
                 # the re-run (r15 / ADVICE).
                 continue
-            prior_cells = _cells_holding(stored, ids, id_col)
+            prior_cells = _cells_holding(stored, ids, "vec_id")
             if not prior_cells:
                 continue
             existing = stored.filter(
@@ -2453,7 +2348,7 @@ def delete_from_ivf_index(
             # mutated and die with FileNotFoundException mid-erasure;
             # localCheckpoint materializes once and never re-lists.
             survivors = existing.join(
-                F.broadcast(ids), on=id_col, how="left_anti"
+                F.broadcast(ids), on="vec_id", how="left_anti"
             ).localCheckpoint(eager=True)
             present = {
                 r["cell_id"]
@@ -2506,7 +2401,7 @@ def delete_from_ivf_index(
             # path being read (upsert_by_key's trade)
             kept = (
                 spark.read.parquet(vp)
-                .join(F.broadcast(ids), on=id_col, how="left_anti")
+                .join(F.broadcast(ids), on="vec_id", how="left_anti")
                 .localCheckpoint(eager=True)
             )
             kept.write.mode("overwrite").parquet(vp)
@@ -2514,16 +2409,14 @@ def delete_from_ivf_index(
         ids.unpersist(blocking=True)
 
 
-def compact_ivf_index(
-    spark, path: str, files_per_cell: int = 1
-) -> None:
+def compact_ivf_index(spark, path: str) -> None:
     """Small-file compaction for a persisted ANN index (r13): every
     delta merge (:func:`add_to_ivf_index` / :func:`add_to_ivfpq_index`)
     rewrites its touched cells with the write's task parallelism, so a
     long-running ingest accretes files per cell directory — and a
     probe pays per file (task launch + footer read), eroding the very
     directory-pruning advantage the index exists for.  Rewrites each
-    cell to ``files_per_cell`` files through the same dynamic-overwrite
+    cell to one file through the same dynamic-overwrite
     compaction as any partitioned table
     (``sources.writers.compact_partitions``); search results are
     IDENTICAL before and after (hash-pinned via the shared IVF twin).
@@ -2533,7 +2426,7 @@ def compact_ivf_index(
     for codec in (_RAW, _PQ):
         p = f"{path}/{codec.rel}"
         if writers.hadoop_path_exists(spark, p):
-            writers.compact_partitions(spark, p, ["cell_id"], files_per_cell)
+            writers.compact_partitions(spark, p, ["cell_id"])
 
 
 def probe_ladder(n_probe: int, n_cells: int) -> list[int]:
@@ -2654,8 +2547,6 @@ def search_ivf_index(
     k: int = 5,
     n_probe: int = 2,
     id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     params: IndexParams | None = None,
 ) -> DataFrame:
     """Top-k search over a :func:`build_ivf_index` index WITHOUT
@@ -2669,7 +2560,7 @@ def search_ivf_index(
     SQL oracle twin)."""
     return _search(
         _RAW, spark, path, queries, params, None, k, n_probe, 0,
-        id_col, query_id_col, query_vec_col,
+        id_col, "query_id", "query_vec",
     )
 
 
@@ -2681,8 +2572,6 @@ def search_ivf_index_filtered(
     k: int = 5,
     n_probe: int = 2,
     id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     params: IndexParams | None = None,
 ) -> DataFrame:
     """FILTERED top-k over a persisted IVF index — the
@@ -2711,7 +2600,7 @@ def search_ivf_index_filtered(
     """
     return _search(
         _RAW, spark, path, queries, params, where, k, n_probe, 0,
-        id_col, query_id_col, query_vec_col,
+        id_col, "query_id", "query_vec",
     )
 
 
@@ -2723,8 +2612,6 @@ def search_ivfpq_index(
     n_probe: int = 2,
     rerank: int = 4,
     id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     params: IndexParams | None = None,
 ) -> DataFrame:
     """Top-k search over a :func:`build_ivfpq_index` index: probe
@@ -2740,7 +2627,7 @@ def search_ivfpq_index(
     round-trip is lossless."""
     return _search(
         _PQ, spark, path, queries, params, None, k, n_probe, rerank,
-        id_col, query_id_col, query_vec_col,
+        id_col, "query_id", "query_vec",
     )
 
 
@@ -2753,8 +2640,6 @@ def search_ivfpq_index_filtered(
     n_probe: int = 2,
     rerank: int = 4,
     id_col: str = "vec_id",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
     params: IndexParams | None = None,
 ) -> DataFrame:
     """FILTERED top-k over the persisted IVF-PQ index (r14, the
@@ -2785,5 +2670,5 @@ def search_ivfpq_index_filtered(
     with the ranking — the join is staged once per rung)."""
     return _search(
         _PQ, spark, path, queries, params, where, k, n_probe, rerank,
-        id_col, query_id_col, query_vec_col,
+        id_col, "query_id", "query_vec",
     )

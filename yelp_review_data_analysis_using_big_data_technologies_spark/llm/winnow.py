@@ -123,12 +123,7 @@ def winnow_fingerprints(
     )
 
 
-def winnow_pairs(
-    fps: DataFrame,
-    id_col: str = "doc_id",
-    min_shared: int = 2,
-    max_df: int = 64,
-) -> DataFrame:
+def winnow_pairs(fps: DataFrame, min_shared: int = 2, max_df: int = 64) -> DataFrame:
     """Candidate near-dup pairs from a :func:`winnow_fingerprints`
     output: documents sharing at least ``min_shared`` distinct
     fingerprint hashes → ``(id_a, id_b, n_shared)``.
@@ -141,7 +136,7 @@ def winnow_pairs(
     # stage(): the fingerprint pipeline (window + distinct) is
     # referenced THREE times below (both join sides + the df cut) —
     # without the persist it would re-execute per reference
-    by_fp = stage(fps.select(F.col(id_col).alias("id"), "fp").distinct())
+    by_fp = stage(fps.select(F.col("doc_id").alias("id"), "fp").distinct())
     rare = (
         by_fp.groupBy("fp")
         .agg(F.count("*").alias("__df"))
@@ -181,58 +176,46 @@ def _shingle_sql(k: int) -> str:
     )
 
 
-def winnow_fingerprints_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-) -> str:
+def winnow_fingerprints_sql() -> str:
     """DuckDB twin of :func:`winnow_fingerprints` — same md5 hashes,
     same ``hash:pos`` min-encoding, same clamped window frame."""
     return f"""
 WITH tk AS (
-  SELECT {id_col}, {_TOK_SQL} AS tk FROM {table}
-  WHERE {id_col} IS NOT NULL
+  SELECT doc_id, {_TOK_SQL} AS tk FROM documents
+  WHERE doc_id IS NOT NULL
 ), sh AS (
-  SELECT {id_col}, {_shingle_sql(k)} AS sh FROM tk
+  SELECT doc_id, {_shingle_sql(3)} AS sh FROM tk
 ), pos AS (
-  SELECT {id_col}, len(sh) AS m,
+  SELECT doc_id, len(sh) AS m,
          unnest(range(len(sh))) AS p, unnest(sh) AS s
   FROM sh
 ), win AS (
-  SELECT {id_col}, m, p,
+  SELECT doc_id, m, p,
          min(md5(s) || ':' || lpad(CAST(p AS VARCHAR), {_POS_PAD}, '0'))
-           OVER (PARTITION BY {id_col} ORDER BY p
-                 ROWS BETWEEN CURRENT ROW AND {w - 1} FOLLOWING) AS sel
+           OVER (PARTITION BY doc_id ORDER BY p
+                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
   FROM pos
 )
-SELECT DISTINCT {id_col},
+SELECT DISTINCT doc_id,
        CAST(substring(sel, 34, {_POS_PAD}) AS INT) AS fp_pos,
        substring(sel, 1, 32) AS fp
-FROM win WHERE p <= greatest(m - {w}, 0)
-ORDER BY {id_col}, fp_pos
+FROM win WHERE p <= greatest(m - 4, 0)
+ORDER BY doc_id, fp_pos
 """
 
 
-def winnow_pairs_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-    min_shared: int = 2,
-    max_df: int = 64,
-) -> str:
+def winnow_pairs_sql() -> str:
     """DuckDB twin of :func:`winnow_pairs` over
     :func:`winnow_fingerprints_sql` output."""
     return f"""
-WITH fps AS ({winnow_fingerprints_sql(table, id_col, k, w)}),
-by_fp AS (SELECT DISTINCT {id_col} AS id, fp FROM fps),
+WITH fps AS ({winnow_fingerprints_sql()}),
+by_fp AS (SELECT DISTINCT doc_id AS id, fp FROM fps),
 rare AS (
-  SELECT fp FROM by_fp GROUP BY fp HAVING count(*) <= {max_df}
+  SELECT fp FROM by_fp GROUP BY fp HAVING count(*) <= 64
 ),
 indexed AS (SELECT id, fp FROM by_fp JOIN rare USING (fp))
 SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_shared
 FROM indexed a JOIN indexed b ON a.fp = b.fp AND a.id < b.id
-GROUP BY 1, 2 HAVING count(*) >= {min_shared}
+GROUP BY 1, 2 HAVING count(*) >= 2
 ORDER BY id_a, id_b
 """

@@ -77,33 +77,27 @@ def iqr_outlier_profile(
     )
 
 
-def iqr_outlier_profile_sql(
-    keys: Sequence[str] = ("event_type",),
-    table: str = "events",
-    value_col: str = "value",
-    k: float = 1.5,
-) -> str:
+def iqr_outlier_profile_sql(table: str = "events") -> str:
     """DuckDB twin of :func:`iqr_outlier_profile` — ``quantile_cont``
     matches Spark's interpolated ``percentile`` exactly; fences
     compared unrounded."""
-    ks = ", ".join(keys)
     return f"""
 WITH ev AS (
-  SELECT {ks}, {value_col} AS __v FROM {table}
-  WHERE {value_col} IS NOT NULL AND isfinite({value_col})
+  SELECT event_type, value AS __v FROM {table}
+  WHERE value IS NOT NULL AND isfinite(value)
 ), stats AS (
-  SELECT {ks}, count(*) AS n,
+  SELECT event_type, count(*) AS n,
          quantile_cont(__v, 0.25) AS __q1,
          quantile_cont(__v, 0.75) AS __q3,
          avg(__v) AS __mean, stddev_samp(__v) AS __sd
-  FROM ev GROUP BY {ks}
+  FROM ev GROUP BY event_type
 ), j AS (
   SELECT ev.*, stats.n, stats.__q1, stats.__q3, stats.__mean, stats.__sd,
-         stats.__q1 - {k} * (stats.__q3 - stats.__q1) AS __lo,
-         stats.__q3 + {k} * (stats.__q3 - stats.__q1) AS __hi
-  FROM ev JOIN stats USING ({ks})
+         stats.__q1 - 1.5 * (stats.__q3 - stats.__q1) AS __lo,
+         stats.__q3 + 1.5 * (stats.__q3 - stats.__q1) AS __hi
+  FROM ev JOIN stats USING (event_type)
 )
-SELECT {ks}, any_value(n) AS n,
+SELECT event_type, any_value(n) AS n,
        round(any_value(__q1), 6) AS q1,
        round(any_value(__q3), 6) AS q3,
        round(any_value(__q3) - any_value(__q1), 6) AS iqr,
@@ -115,17 +109,13 @@ SELECT {ks}, any_value(n) AS n,
              / any_value(n), 6) AS outlier_frac,
        CAST(sum(COALESCE(CAST(abs(__v - __mean) > 3 * __sd AS BIGINT),
                           0)) AS BIGINT) AS n_z3
-FROM j GROUP BY {ks} ORDER BY {ks}
+FROM j GROUP BY event_type ORDER BY event_type
 """
 
 
-def equidepth_histogram(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-    buckets: int = 4,
-) -> DataFrame:
-    """Per-key EQUI-DEPTH histogram → ``(keys…, bucket, lo, hi, n)``:
+def equidepth_histogram(events: DataFrame, buckets: int = 4) -> DataFrame:
+    """Per-``event_type`` EQUI-DEPTH histogram of ``value`` →
+    ``(event_type, bucket, lo, hi, n)``:
     bucket edges at the ``i/buckets`` interpolated quantiles, so each
     bucket holds ~equal mass — the binning that stays readable on
     heavy-tailed measures where the fixed-width histogram dumps 99%
@@ -148,11 +138,11 @@ def equidepth_histogram(
     """
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
-    v = F.col(value_col)
+    v = F.col("value")
     finite = v.isNotNull() & ~F.isnan(v) & (F.abs(v) != F.lit(float("inf")))
-    ev = events.where(finite).select(*keys, v.alias("__v"))
+    ev = events.where(finite).select("event_type", v.alias("__v"))
     qs = [i / buckets for i in range(1, buckets)]
-    stats = ev.groupBy(*keys).agg(
+    stats = ev.groupBy("event_type").agg(
         F.min("__v").alias("__e0"),
         *[
             F.percentile("__v", F.lit(q)).alias(f"__e{i + 1}")
@@ -160,7 +150,7 @@ def equidepth_histogram(
         ],
         F.max("__v").alias(f"__e{buckets}"),
     )
-    joined = ev.join(F.broadcast(stats), list(keys))
+    joined = ev.join(F.broadcast(stats), ["event_type"])
     bucket = F.lit(1)
     for i in range(1, buckets):
         bucket = bucket + (F.col("__v") > F.col(f"__e{i}")).cast("int")
@@ -171,74 +161,62 @@ def equidepth_histogram(
         hi = hi.when(F.col("bucket") == i, F.col(f"__e{i}"))
     return (
         joined.withColumn("bucket", bucket)
-        .groupBy(*keys, "bucket")
+        .groupBy("event_type", "bucket")
         .agg(
             F.round(F.first(lo), 6).alias("lo"),
             F.round(F.first(hi), 6).alias("hi"),
             F.count(F.lit(1)).alias("n"),
         )
-        .orderBy(*keys, "bucket")
+        .orderBy("event_type", "bucket")
     )
 
 
-def equidepth_histogram_sql(
-    keys: Sequence[str] = ("event_type",),
-    table: str = "events",
-    value_col: str = "value",
-    buckets: int = 4,
-) -> str:
+def equidepth_histogram_sql() -> str:
     """DuckDB twin of :func:`equidepth_histogram` — same quantile
     edges, same comparison-sum bucket rule."""
-    ks = ", ".join(keys)
     edges = ",\n         ".join(
-        f"quantile_cont(__v, {i / buckets:.17g}) AS __e{i}"
-        for i in range(1, buckets)
+        f"quantile_cont(__v, {i / 4:.17g}) AS __e{i}"
+        for i in range(1, 4)
     )
     bucket_expr = " + ".join(
-        f"CAST(__v > __e{i} AS INT)" for i in range(1, buckets)
+        f"CAST(__v > __e{i} AS INT)" for i in range(1, 4)
     )
     lo_arms = " ".join(
-        f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, buckets + 1)
+        f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, 5)
     )
     hi_arms = " ".join(
-        f"WHEN bucket = {i} THEN __e{i}" for i in range(1, buckets + 1)
+        f"WHEN bucket = {i} THEN __e{i}" for i in range(1, 5)
     )
     return f"""
 WITH ev AS (
-  SELECT {ks}, {value_col} AS __v FROM {table}
-  WHERE {value_col} IS NOT NULL AND isfinite({value_col})
+  SELECT event_type, value AS __v FROM events
+  WHERE value IS NOT NULL AND isfinite(value)
 ), stats AS (
-  SELECT {ks}, min(__v) AS __e0,
+  SELECT event_type, min(__v) AS __e0,
          {edges},
-         max(__v) AS __e{buckets}
-  FROM ev GROUP BY {ks}
+         max(__v) AS __e4
+  FROM ev GROUP BY event_type
 ), j AS (
-  SELECT ev.*, stats.* EXCLUDE ({ks}),
+  SELECT ev.*, stats.* EXCLUDE (event_type),
          1 + {bucket_expr} AS bucket
-  FROM ev JOIN stats USING ({ks})
+  FROM ev JOIN stats USING (event_type)
 )
-SELECT {ks}, CAST(bucket AS INT) AS bucket,
+SELECT event_type, CAST(bucket AS INT) AS bucket,
        round(any_value(CASE {lo_arms} END), 6) AS lo,
        round(any_value(CASE {hi_arms} END), 6) AS hi,
        count(*) AS n
-FROM j GROUP BY {ks}, bucket ORDER BY {ks}, bucket
+FROM j GROUP BY event_type, bucket ORDER BY event_type, bucket
 """
 
 
-def changepoint_profile(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    bucket: str = "hour",
-) -> DataFrame:
-    """Per-key CUSUM mean-shift changepoint → ``(keys…, n_buckets,
+def changepoint_profile(events: DataFrame) -> DataFrame:
+    """Per-``event_type`` CUSUM mean-shift changepoint → ``(event_type, n_buckets,
     cp_ts, max_abs_cusum, mean_before, mean_after, shift)`` — the
     drift question a monitoring pipeline asks of every metric: WHEN
     did this series' level change, and by how much.
 
     Method (classic offline CUSUM, Page 1954): bucket the series to
-    ``bucket`` granularity (per-bucket SUM of ``value_col``), compute
+    hourly granularity (per-hour SUM of ``value``), compute
     the running cumulative sum of deviations from the key's overall
     per-bucket mean, and take the bucket with the maximum |CUSUM| as
     the changepoint; ``mean_before``/``mean_after`` are the per-bucket
@@ -262,8 +240,8 @@ def changepoint_profile(
     same spine.  NULL/non-finite values and NULL timestamps drop up
     front (the iqr_outlier_profile contract).
     """
-    v = F.col(value_col)
-    ts = F.col(ts_col)
+    v = F.col("value")
+    ts = F.col("ts")
     finite = (
         v.isNotNull()
         & ~F.isnan(v)
@@ -272,16 +250,16 @@ def changepoint_profile(
     )
     hourly = (
         events.where(finite)
-        .groupBy(*keys, F.date_trunc(bucket, ts).alias("__bts"))
+        .groupBy("event_type", F.date_trunc("hour", ts).alias("__bts"))
         .agg(F.sum(v).alias("__x"))
     )
     from pyspark.sql import Window
 
-    w_all = Window.partitionBy(*keys)
-    w_ord = Window.partitionBy(*keys).orderBy("__bts")
+    w_all = Window.partitionBy("event_type")
+    w_ord = Window.partitionBy("event_type").orderBy("__bts")
     w_run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cur = hourly.select(
-        *keys,
+        "event_type",
         "__bts",
         "__x",
         (
@@ -289,7 +267,7 @@ def changepoint_profile(
             - F.row_number().over(w_ord) * F.avg("__x").over(w_all)
         ).alias("__cusum"),
     )
-    cp = cur.groupBy(*keys).agg(
+    cp = cur.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.max(
             F.struct(
@@ -298,10 +276,10 @@ def changepoint_profile(
             )
         ).alias("__cp"),
     )
-    joined = hourly.join(F.broadcast(cp), list(keys))
+    joined = hourly.join(F.broadcast(cp), ["event_type"])
     before = F.col("__bts") <= F.col("__cp.t")
     return (
-        joined.groupBy(*keys)
+        joined.groupBy("event_type")
         .agg(
             F.first("n_buckets").alias("n_buckets"),
             F.first(F.col("__cp.t")).alias("cp_ts"),
@@ -324,44 +302,37 @@ def changepoint_profile(
                 6,
             ).alias("shift"),
         )
-        .orderBy(*keys)
+        .orderBy("event_type")
     )
 
 
-def changepoint_profile_sql(
-    keys: Sequence[str] = ("event_type",),
-    table: str = "events",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    bucket: str = "hour",
-) -> str:
+def changepoint_profile_sql() -> str:
     """DuckDB twin of :func:`changepoint_profile` — same bucketing,
     same running-sum-minus-k·mean CUSUM, same rounded argmax with the
     latest-bucket tie-break."""
-    ks = ", ".join(keys)
-    return f"""
+    return """
 WITH hourly AS (
-  SELECT {ks}, date_trunc('{bucket}', {ts_col}) AS __bts,
-         sum({value_col}) AS __x
-  FROM {table}
-  WHERE {value_col} IS NOT NULL AND isfinite({value_col})
-        AND {ts_col} IS NOT NULL
-  GROUP BY {ks}, date_trunc('{bucket}', {ts_col})
+  SELECT event_type, date_trunc('hour', ts) AS __bts,
+         sum(value) AS __x
+  FROM events
+  WHERE value IS NOT NULL AND isfinite(value)
+        AND ts IS NOT NULL
+  GROUP BY event_type, date_trunc('hour', ts)
 ), cur AS (
-  SELECT {ks}, __bts, __x,
-         sum(__x) OVER (PARTITION BY {ks} ORDER BY __bts
+  SELECT event_type, __bts, __x,
+         sum(__x) OVER (PARTITION BY event_type ORDER BY __bts
                         ROWS UNBOUNDED PRECEDING)
-         - row_number() OVER (PARTITION BY {ks} ORDER BY __bts)
-           * avg(__x) OVER (PARTITION BY {ks}) AS __cusum
+         - row_number() OVER (PARTITION BY event_type ORDER BY __bts)
+           * avg(__x) OVER (PARTITION BY event_type) AS __cusum
   FROM hourly
 ), cp AS (
-  SELECT {ks}, __bts AS cp_t, round(abs(__cusum), 6) AS cp_a,
-         count(*) OVER (PARTITION BY {ks}) AS n_buckets
+  SELECT event_type, __bts AS cp_t, round(abs(__cusum), 6) AS cp_a,
+         count(*) OVER (PARTITION BY event_type) AS n_buckets
   FROM cur
-  QUALIFY row_number() OVER (PARTITION BY {ks}
+  QUALIFY row_number() OVER (PARTITION BY event_type
             ORDER BY round(abs(__cusum), 6) DESC, __bts DESC) = 1
 )
-SELECT {ks}, cp.n_buckets, cp.cp_t AS cp_ts,
+SELECT event_type, cp.n_buckets, cp.cp_t AS cp_ts,
        round(cp.cp_a, 6) AS max_abs_cusum,
        round(sum(CASE WHEN __bts <= cp_t THEN __x END)
              / count(CASE WHEN __bts <= cp_t THEN 1 END), 6)
@@ -373,7 +344,7 @@ SELECT {ks}, cp.n_buckets, cp.cp_t AS cp_ts,
              / count(CASE WHEN __bts > cp_t THEN 1 END)
              - sum(CASE WHEN __bts <= cp_t THEN __x END)
              / count(CASE WHEN __bts <= cp_t THEN 1 END), 6) AS shift
-FROM hourly JOIN cp USING ({ks})
-GROUP BY {ks}, cp.n_buckets, cp.cp_t, cp.cp_a
-ORDER BY {ks}
+FROM hourly JOIN cp USING (event_type)
+GROUP BY event_type, cp.n_buckets, cp.cp_t, cp.cp_a
+ORDER BY event_type
 """

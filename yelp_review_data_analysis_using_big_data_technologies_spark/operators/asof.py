@@ -5,7 +5,8 @@ lacks natively, built as a composition of existing relational ops
 Semantics: for every left row, attach the single right row with the
 greatest ``on`` ≤ left.``on`` (direction="backward"; ties match) or
 the smallest ``on`` ≥ left.``on`` ("forward") within the same ``by``
-group, optionally bounded by ``tolerance``.  Unmatched left rows keep
+group (``on`` is ``ts``, ``by`` is ``user_id``), optionally bounded
+by ``tolerance``.  Unmatched left rows keep
 NULL match columns (left-outer semantics) — the same contract as
 DuckDB's native ``ASOF LEFT JOIN``, which serves as the oracle twin.
 
@@ -24,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import cols_list
 
 #: Prefix of the matched right-side columns (``asof_ts``, ...).
 _MATCH_PREFIX = "asof_"
@@ -33,8 +33,6 @@ _MATCH_PREFIX = "asof_"
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    on: str = "ts",
-    by: str | list[str] = "user_id",
     direction: str = "backward",
     tolerance: Column | None = None,
 ) -> DataFrame:
@@ -43,28 +41,27 @@ def asof_join(
 
     ``tolerance`` — optional max time gap as a Column interval
     (e.g. ``F.expr("INTERVAL 1 HOUR")``); matches farther than it are
-    nulled out.  Duplicate (by, on) right rows collapse
+    nulled out.  Duplicate (user_id, ts) right rows collapse
     deterministically (the lexicographically greatest payload wins)
     so the match is well-defined.
     """
     if direction not in ("backward", "forward"):
         raise ValueError("direction must be 'backward' or 'forward'")
-    by_cols = cols_list(by)
 
-    r_payload = [c for c in right.columns if c not in {*by_cols, on}]
+    r_payload = [c for c in right.columns if c not in {"user_id", "ts"}]
     # a right row with NULL ts can be "nearest" to nothing (the SQL
     # twin's inequality never matches it), but in the window
     # formulation it would sort to the partition edge and leak its
     # payload into early left rows as a NULL-ts match
-    right = right.filter(F.col(on).isNotNull())
+    right = right.filter(F.col("ts").isNotNull())
     r = right.select(
-        *by_cols,
-        F.col(on),
-        F.struct(F.col(on).alias("__t"), *[F.col(c) for c in r_payload]).alias(
+        "user_id",
+        F.col("ts"),
+        F.struct(F.col("ts").alias("__t"), *[F.col(c) for c in r_payload]).alias(
             "__rp"
         ),
     )
-    r = r.groupBy(*by_cols, on).agg(F.max("__rp").alias("__rp"))
+    r = r.groupBy("user_id", "ts").agg(F.max("__rp").alias("__rp"))
 
     l = left.withColumn("__side", F.lit(1))
     r = r.withColumn("__side", F.lit(0))
@@ -75,14 +72,14 @@ def asof_join(
     # the latest right payload forward.  Forward mirrors it in reverse.
     if direction == "backward":
         w = (
-            Window.partitionBy(*by_cols)
-            .orderBy(F.asc(on), F.asc("__side"))
+            Window.partitionBy("user_id")
+            .orderBy(F.asc("ts"), F.asc("__side"))
             .rowsBetween(Window.unboundedPreceding, 0)
         )
     else:
         w = (
-            Window.partitionBy(*by_cols)
-            .orderBy(F.desc(on), F.asc("__side"))
+            Window.partitionBy("user_id")
+            .orderBy(F.desc("ts"), F.asc("__side"))
             .rowsBetween(Window.unboundedPreceding, 0)
         )
     matched = u.withColumn("__m", F.last("__rp", ignorenulls=True).over(w))
@@ -93,21 +90,19 @@ def asof_join(
     # NULL-ts left row in the forward direction sorts past the last
     # point (desc nulls last) and picks up the series MINIMUM, and
     # NULL keys form a matching "group" the equality join never has.
-    valid = F.col(on).isNotNull()
-    for c in by_cols:
-        valid = valid & F.col(c).isNotNull()
+    valid = F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     out = out.withColumn("__m", F.when(valid, F.col("__m")))
     if tolerance is not None:
         gap_ok = (
-            F.col(on) - F.col("__m.__t") <= tolerance
+            F.col("ts") - F.col("__m.__t") <= tolerance
             if direction == "backward"
-            else F.col("__m.__t") - F.col(on) <= tolerance
+            else F.col("__m.__t") - F.col("ts") <= tolerance
         )
         out = out.withColumn("__m", F.when(gap_ok, F.col("__m")))
 
     keep = [c for c in left.columns]
     return out.select(
         *keep,
-        F.col("__m.__t").alias(f"{_MATCH_PREFIX}{on}"),
+        F.col("__m.__t").alias(f"{_MATCH_PREFIX}ts"),
         *[F.col(f"__m.{c}").alias(f"{_MATCH_PREFIX}{c}") for c in r_payload],
     )

@@ -26,8 +26,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
 
 def cooccurrence_lift(
     facts: DataFrame,
-    entity_col: str = "user_id",
-    item_col: str = "event_type",
     min_pair_n: int = 1,
     max_items_per_key: int = 1000,
 ) -> DataFrame:
@@ -45,7 +43,7 @@ def cooccurrence_lift(
     distinct items are EXCLUDED from every count (marginals, total,
     and pairs stay mutually consistent — a capped entity vanishes
     from the universe rather than skewing lift)."""
-    e, i = F.col(entity_col), F.col(item_col)
+    e, i = F.col("user_id"), F.col("event_type")
     pairs_src = facts.where(e.isNotNull() & i.isNotNull()).select(
         e.alias("__e"), i.alias("__i")
     )
@@ -98,25 +96,19 @@ def cooccurrence_lift(
     )
 
 
-def cooccurrence_lift_sql(
-    entity_col: str = "user_id",
-    item_col: str = "event_type",
-    table: str = "events",
-    min_pair_n: int = 1,
-    max_items_per_key: int = 1000,
-) -> str:
+def cooccurrence_lift_sql() -> str:
     """DuckDB twin of :func:`cooccurrence_lift` — same distinct
     relation, same fan-out cap, same fixed division order."""
-    return f"""
+    return """
 WITH pe AS (
-  SELECT DISTINCT {entity_col} AS __e, {item_col} AS __i
-  FROM {table}
-  WHERE {entity_col} IS NOT NULL AND {item_col} IS NOT NULL
+  SELECT DISTINCT user_id AS __e, event_type AS __i
+  FROM events
+  WHERE user_id IS NOT NULL AND event_type IS NOT NULL
 ), u AS (
   SELECT __e, __i FROM pe
   WHERE __e IN (
     SELECT __e FROM pe GROUP BY __e
-    HAVING count(*) <= {max_items_per_key}
+    HAVING count(*) <= 1000
   )
 ), tot AS (
   SELECT count(DISTINCT __e) AS __n FROM u
@@ -126,7 +118,7 @@ WITH pe AS (
   SELECT l.__i AS item_a, r.__i AS item_b, CAST(count(*) AS BIGINT) AS n_ab
   FROM u l JOIN u r ON l.__e = r.__e AND l.__i < r.__i
   GROUP BY 1, 2
-  HAVING count(*) >= {min_pair_n}
+  HAVING count(*) >= 1
 )
 SELECT item_a, item_b, n_ab, ma.__ni AS n_a, mb.__ni AS n_b,
        round(n_ab / CAST(__n AS DOUBLE), 6) AS support,

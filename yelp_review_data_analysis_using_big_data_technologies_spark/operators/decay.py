@@ -45,32 +45,30 @@ def decay_weight(ts_col: Column | str, anchor_us: Column, half_life_s: float) ->
 def ewma_by_key(
     events: DataFrame,
     keys: Sequence[str],
-    ts_col: str = "ts",
-    value_col: str = "value",
     half_life_s: float = 7 * 24 * 3600.0,
 ) -> DataFrame:
-    """Per-key EWMA of ``value_col`` anchored at the table's max
-    ``ts_col`` (the "now" of the dataset), plus the plain average for
+    """Per-key EWMA of ``value`` anchored at the table's max
+    ``ts`` (the "now" of the dataset), plus the plain average for
     contrast and the effective sample size ``(Σw)²/Σw²`` (how many
     "fully-weighted" events the decayed estimate is worth — the
     standard reliability dial for downstream consumers).
 
     Plan: one 1-row max(ts) aggregate broadcast onto the events
     (bounded build side), then a single partial aggregate on the
-    keys.  A row contributes only when BOTH ``value_col`` and
-    ``ts_col`` are non-NULL — a NULL timestamp has no decay weight,
+    keys.  A row contributes only when BOTH ``value`` and
+    ``ts`` are non-NULL — a NULL timestamp has no decay weight,
     so the row is excluded from ``n``/``plain_avg``/``effective_n``
     too; the three output columns always cover the same row set.
     Non-finite values are the caller's `_finite_value` contract, as
     everywhere in the events family."""
-    anchor = events.agg(F.max(ts_col).alias("__anchor_ts")).select(
+    anchor = events.agg(F.max("ts").alias("__anchor_ts")).select(
         F.unix_micros(F.col("__anchor_ts").cast("timestamp")).alias(
             "__anchor_us"
         )
     )
-    w = decay_weight(ts_col, F.col("__anchor_us"), half_life_s)
-    v = F.col(value_col)
-    valid = v.isNotNull() & F.col(ts_col).isNotNull()
+    w = decay_weight("ts", F.col("__anchor_us"), half_life_s)
+    v = F.col("value")
+    valid = v.isNotNull() & F.col("ts").isNotNull()
     weighted = events.join(F.broadcast(anchor)).select(
         *keys,
         F.when(valid, v).alias("__v"),
@@ -91,32 +89,25 @@ def ewma_by_key(
     )
 
 
-def ewma_by_key_sql(
-    keys: Sequence[str] = ("event_type",),
-    table: str = "events",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    half_life_s: float = 7 * 24 * 3600.0,
-) -> str:
+def ewma_by_key_sql(table: str = "events") -> str:
     """DuckDB twin — identical arithmetic over ``epoch_us`` integers
     (value AND weight guarded to rows where both value and timestamp
     are non-NULL, exactly like the Spark side)."""
-    ks = ", ".join(keys)
-    rate = repr(math.log(0.5) / (half_life_s * 1_000_000.0))
-    valid = f"{value_col} IS NOT NULL AND {ts_col} IS NOT NULL"
+    rate = repr(math.log(0.5) / ((7 * 24 * 3600.0) * 1_000_000.0))
+    valid = "value IS NOT NULL AND ts IS NOT NULL"
     return f"""
 WITH anchored AS (
-  SELECT {ks},
-         CASE WHEN {valid} THEN {value_col} END AS __v,
+  SELECT event_type,
+         CASE WHEN {valid} THEN value END AS __v,
          CASE WHEN {valid} THEN
-           exp(CAST((SELECT epoch_us(max({ts_col})) FROM {table})
-                    - epoch_us({ts_col}) AS DOUBLE) * ({rate}))
+           exp(CAST((SELECT epoch_us(max(ts)) FROM {table})
+                    - epoch_us(ts) AS DOUBLE) * ({rate}))
          END AS __w
   FROM {table}
 )
-SELECT {ks}, count(__v) AS n,
+SELECT event_type, count(__v) AS n,
        round(sum(__w * __v) / sum(__w), 6) + 0 AS ewma,
        round(avg(__v), 6) + 0 AS plain_avg,
        round(sum(__w) * sum(__w) / sum(__w * __w), 6) AS effective_n
-FROM anchored GROUP BY {ks} ORDER BY {ks}
+FROM anchored GROUP BY event_type ORDER BY event_type
 """

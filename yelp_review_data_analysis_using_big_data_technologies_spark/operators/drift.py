@@ -63,37 +63,32 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
 _FINITE = lambda c: c.isNotNull() & ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))  # noqa: E731
 
 
-def psi_profile_sql(
-    ref_sql: str,
-    cur_sql: str,
-    value_col: str = "value",
-    buckets: int = 10,
-) -> str:
+def psi_profile_sql(ref_sql: str, cur_sql: str) -> str:
     """DuckDB twin of :func:`psi_profile_frozen` over
     :func:`psi_freeze_reference` — same reference-quantile
     edges (``quantile_cont`` ≡ Spark ``percentile``), same
     comparison-sum bucket rule, same smoothing, same decimal-summed
     total.  ``ref_sql``/``cur_sql`` are subqueries projecting
-    ``value_col``."""
+    ``value``."""
     edges = ",\n         ".join(
-        f"quantile_cont(__v, {i / buckets:.17g}) AS __e{i}"
-        for i in range(1, buckets)
+        f"quantile_cont(__v, {i / 10:.17g}) AS __e{i}"
+        for i in range(1, 10)
     )
-    bucket_expr = " + ".join(f"CAST(__v > __e{i} AS INT)" for i in range(1, buckets))
-    lo_arms = " ".join(f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, buckets + 1))
-    hi_arms = " ".join(f"WHEN bucket = {i} THEN __e{i}" for i in range(1, buckets + 1))
-    half = buckets / 2.0
+    bucket_expr = " + ".join(f"CAST(__v > __e{i} AS INT)" for i in range(1, 10))
+    lo_arms = " ".join(f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, 11))
+    hi_arms = " ".join(f"WHEN bucket = {i} THEN __e{i}" for i in range(1, 11))
+    half = 5.0
     return f"""
 WITH r AS (
-  SELECT {value_col} AS __v FROM ({ref_sql})
-  WHERE {value_col} IS NOT NULL AND isfinite({value_col})
+  SELECT value AS __v FROM ({ref_sql})
+  WHERE value IS NOT NULL AND isfinite(value)
 ), c AS (
-  SELECT {value_col} AS __v FROM ({cur_sql})
-  WHERE {value_col} IS NOT NULL AND isfinite({value_col})
+  SELECT value AS __v FROM ({cur_sql})
+  WHERE value IS NOT NULL AND isfinite(value)
 ), stats AS (
   SELECT min(__v) AS __e0,
          {edges},
-         max(__v) AS __e{buckets}
+         max(__v) AS __e10
   FROM r
 ), tagged AS (
   SELECT __v, 'r' AS __side FROM r
@@ -109,7 +104,7 @@ WITH r AS (
   GROUP BY bucket
 ), spine AS (
   SELECT CAST(gs.generate_series AS INT) AS bucket, stats.*
-  FROM generate_series(1, {buckets}) gs CROSS JOIN stats
+  FROM generate_series(1, 10) gs CROSS JOIN stats
 ), pb AS (
   SELECT spine.bucket,
          round(CASE {lo_arms} END, 6) AS lo,
@@ -138,11 +133,7 @@ FROM termed ORDER BY bucket
 """
 
 
-def psi_freeze_reference(
-    ref: DataFrame,
-    value_col: str = "value",
-    buckets: int = 10,
-) -> dict:
+def psi_freeze_reference(ref: DataFrame, buckets: int = 10) -> dict:
     """Collect the reference's frozen PSI profile — raw quantile
     edges plus per-bucket reference counts — as driver-side literals
     (≤ ``buckets + 1`` doubles + ``buckets`` longs: the bounded
@@ -158,7 +149,7 @@ def psi_freeze_reference(
     rounds ``lo``/``hi`` in Spark."""
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
-    v = F.col(value_col)
+    v = F.col("value")
     r = ref.where(_FINITE(v)).select(v.alias("__v"))
     qs = [i / buckets for i in range(1, buckets)]
     stats = r.agg(
@@ -185,11 +176,7 @@ def psi_freeze_reference(
     }
 
 
-def psi_profile_frozen(
-    cur: DataFrame,
-    frozen: dict,
-    value_col: str = "value",
-) -> DataFrame:
+def psi_profile_frozen(cur: DataFrame, frozen: dict) -> DataFrame:
     """PSI of ``cur`` against a frozen reference
     (:func:`psi_freeze_reference`) per reference-quantile bucket →
     ``(bucket, lo, hi, ref_n, cur_n, ref_share, cur_share, psi_term,
@@ -209,7 +196,7 @@ def psi_profile_frozen(
     buckets = int(frozen["buckets"])
     edges = frozen["edges"]
     ref_counts = frozen["ref_counts"]
-    v = F.col(value_col)
+    v = F.col("value")
     c = cur.where(_FINITE(v)).select(v.alias("__v"))
     bucket = F.lit(1)
     for i in range(1, buckets):
@@ -274,14 +261,12 @@ def psi_profile_frozen(
     )
 
 
-def ks_side_counts(
-    df: DataFrame, value_col: str = "value", out_col: str = "__an"
-) -> DataFrame:
+def ks_side_counts(df: DataFrame, out_col: str = "__an") -> DataFrame:
     """Per-distinct-value counts of one KS side ``(__v, out_col)`` —
     the reference-side state :func:`ks_2sample` takes.  A streaming
     monitor computes it once per run; the batch entry computes it
     for its one snapshot."""
-    v = F.col(value_col)
+    v = F.col("value")
     return (
         df.where(_FINITE(v))
         .groupBy(v.alias("__v"))
@@ -289,12 +274,7 @@ def ks_side_counts(
     )
 
 
-def ks_2sample(
-    a_counts: DataFrame,
-    b: DataFrame,
-    value_col: str = "value",
-    buckets: int = 32,
-) -> DataFrame:
+def ks_2sample(a_counts: DataFrame, b: DataFrame, buckets: int = 32) -> DataFrame:
     """Exact two-sample KS statistic between the reference side
     ``a`` — given as its :func:`ks_side_counts` — and the sample
     ``b`` → ONE row ``(ks_stat, ks_at, n_a, n_b)``: the max CDF gap,
@@ -318,7 +298,7 @@ def ks_2sample(
     zero = F.lit(0).cast("bigint")
     counts = stage(
         a_counts.join(
-            ks_side_counts(b, value_col, out_col="__bn"),
+            ks_side_counts(b, out_col="__bn"),
             on="__v",
             how="full",
         ).select(
@@ -401,11 +381,7 @@ def ks_2sample(
     )
 
 
-def ks_2sample_sql(
-    a_sql: str,
-    b_sql: str,
-    value_col: str = "value",
-) -> str:
+def ks_2sample_sql(a_sql: str, b_sql: str) -> str:
     """DuckDB twin of :func:`ks_2sample` over both raw sides — the
     NAIVE single-window CDF formulation the two-level decomposition
     must equal (HUGEINT
@@ -414,11 +390,11 @@ def ks_2sample_sql(
 WITH counts AS (
   SELECT __v, CAST(sum(__a) AS BIGINT) AS __an, CAST(sum(__b) AS BIGINT) AS __bn
   FROM (
-    SELECT {value_col} AS __v, 1 AS __a, 0 AS __b FROM ({a_sql})
-    WHERE {value_col} IS NOT NULL AND isfinite({value_col})
+    SELECT value AS __v, 1 AS __a, 0 AS __b FROM ({a_sql})
+    WHERE value IS NOT NULL AND isfinite(value)
     UNION ALL
-    SELECT {value_col} AS __v, 0 AS __a, 1 AS __b FROM ({b_sql})
-    WHERE {value_col} IS NOT NULL AND isfinite({value_col})
+    SELECT value AS __v, 0 AS __a, 1 AS __b FROM ({b_sql})
+    WHERE value IS NOT NULL AND isfinite(value)
   ) GROUP BY __v
 ), cdf AS (
   SELECT __v,
@@ -439,14 +415,14 @@ GROUP BY n_a, n_b
 """
 
 
-def chi2_freeze_reference(ref: DataFrame, cat_col: str = "event_type") -> dict:
+def chi2_freeze_reference(ref: DataFrame) -> dict:
     """Collect the reference's per-category counts as driver-side
     literals (bounded by the CATEGORY DOMAIN — the codebook class of
     collect), so the reference snapshot is scanned once and every
     score (:func:`chi2_drift_frozen`) touches only its current side.
     NULL categories drop (they are a data-quality finding, not a drift
     signal)."""
-    cc = F.col(cat_col)
+    cc = F.col("event_type")
     rows = (
         ref.where(cc.isNotNull())
         .groupBy(cc.alias("category"))
@@ -460,11 +436,7 @@ def chi2_freeze_reference(ref: DataFrame, cat_col: str = "event_type") -> dict:
     }
 
 
-def chi2_drift_frozen(
-    cur: DataFrame,
-    frozen: dict,
-    cat_col: str = "event_type",
-) -> DataFrame:
+def chi2_drift_frozen(cur: DataFrame, frozen: dict) -> DataFrame:
     """Pearson χ² of ``cur`` against a frozen reference
     (:func:`chi2_freeze_reference`) over the 2×C (side × category)
     contingency table → ``(category, ref_n, cur_n, contrib,
@@ -484,7 +456,7 @@ def chi2_drift_frozen(
         frozen["ref_counts"],
         f"category {frozen['cat_type']}, ref_n bigint",
     )
-    cc = F.col(cat_col)
+    cc = F.col("event_type")
     cur_counts = (
         cur.where(cc.isNotNull())
         .groupBy(cc.alias("category"))
@@ -534,21 +506,17 @@ def chi2_drift_frozen(
     )
 
 
-def chi2_drift_sql(
-    ref_sql: str,
-    cur_sql: str,
-    cat_col: str = "event_type",
-) -> str:
+def chi2_drift_sql(ref_sql: str, cur_sql: str) -> str:
     """DuckDB twin of :func:`chi2_drift_frozen` over
     :func:`chi2_freeze_reference` — same margins, same
     zero-expectation guard, same decimal-summed total."""
     return f"""
 WITH tagged AS (
-  SELECT {cat_col} AS category, 1 AS __r, 0 AS __c FROM ({ref_sql})
-  WHERE {cat_col} IS NOT NULL
+  SELECT event_type AS category, 1 AS __r, 0 AS __c FROM ({ref_sql})
+  WHERE event_type IS NOT NULL
   UNION ALL
-  SELECT {cat_col} AS category, 0 AS __r, 1 AS __c FROM ({cur_sql})
-  WHERE {cat_col} IS NOT NULL
+  SELECT event_type AS category, 0 AS __r, 1 AS __c FROM ({cur_sql})
+  WHERE event_type IS NOT NULL
 ), pc AS (
   SELECT category,
          CAST(sum(__r) AS BIGINT) AS ref_n,

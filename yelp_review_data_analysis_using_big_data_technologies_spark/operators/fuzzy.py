@@ -34,11 +34,10 @@ def fuzzy_pairs_sorted_neighborhood(
     id_col: str,
     key_col: str,
     window: int = 3,
-    max_distance: int = 1,
     block_col: Column | str | None = None,
 ) -> DataFrame:
-    """Pairs ``(id_a, id_b, distance)`` with edit distance ≤
-    ``max_distance`` among rows within ``window`` positions in
+    """Pairs ``(id_a, id_b, distance)`` with edit distance ≤ 1 among
+    rows within ``window`` positions in
     ``key_col``'s sort order inside each block (ties broken by id —
     deterministic for unique (key, id))."""
     if window < 1:
@@ -75,7 +74,7 @@ def fuzzy_pairs_sorted_neighborhood(
         paired.withColumn(
             "distance", F.levenshtein(F.col(key_col), F.col("__n.nkey"))
         )
-        .filter(F.col("distance") <= max_distance)
+        .filter(F.col("distance") <= 1)
         .select(
             F.col(id_col).alias("id_a"),
             F.col("__n.nid").alias("id_b"),
@@ -88,15 +87,12 @@ def fuzzy_pairs_sql(
     table: str,
     id_col: str,
     key_col: str,
-    window: int = 3,
-    max_distance: int = 1,
     block_expr: str | None = None,
 ) -> str:
-    """DuckDB twin: the same blocked lead() neighborhood and
+    """DuckDB twin at the default 3-row window: the same blocked
+    lead() neighborhood and
     levenshtein verify (same input contract and the same pinned
     NULLS FIRST sort as the Spark side)."""
-    if window < 1:
-        raise ValueError("window must be >= 1")
     part = f"PARTITION BY {block_expr} " if block_expr else ""
     # distinct window names per branch: DuckDB rejects re-defining the
     # same WINDOW alias across UNION ALL branches of one query
@@ -106,10 +102,10 @@ def fuzzy_pairs_sql(
         f"lead({key_col}, {i}) OVER w{i} AS k_b "
         f"FROM {table} WINDOW w{i} AS ({part}ORDER BY "
         f"{key_col} NULLS FIRST, {id_col} NULLS FIRST)"
-        for i in range(1, window + 1)
+        for i in range(1, 4)
     )
     return (
         f"SELECT id_a, id_b, levenshtein(k_a, k_b) AS distance "
         f"FROM ({leads}) WHERE id_b IS NOT NULL "
-        f"AND levenshtein(k_a, k_b) <= {max_distance}"
+        "AND levenshtein(k_a, k_b) <= 1"
     )

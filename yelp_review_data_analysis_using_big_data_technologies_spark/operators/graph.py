@@ -250,11 +250,7 @@ def pagerank(
     )
 
 
-def triangle_counts(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
+def triangle_counts(pairs: DataFrame) -> DataFrame:
     """Per-node triangle count + local clustering coefficient over the
     undirected pair relation → ``(id, degree, triangles, clustering)``
     — the density diagnostic for near-dup graphs: clustering ≈ 1 means
@@ -283,7 +279,7 @@ def triangle_counts(
     as ``pagerank``; duplicate/swapped input edges canonicalize to one
     edge.
     """
-    a, b = F.col(id_a), F.col(id_b)
+    a, b = F.col("id_a"), F.col("id_b")
     canon = (
         pairs.where(a.isNotNull() & b.isNotNull() & (a != b))
         .select(
@@ -355,17 +351,15 @@ def triangle_counts(
     )
 
 
-def triangle_counts_sql(
-    pairs_sql: str, id_a: str = "id_a", id_b: str = "id_b", id_out: str = "id"
-) -> str:
+def triangle_counts_sql(pairs_sql: str, id_out: str = "id") -> str:
     """DuckDB twin of :func:`triangle_counts` — identical
     canonicalize → wedge → close → credit-3-corners pipeline."""
     return f"""
 WITH pairs AS ({pairs_sql}),
 canon AS (
-  SELECT DISTINCT least({id_a}, {id_b}) AS a, greatest({id_a}, {id_b}) AS b
+  SELECT DISTINCT least(id_a, id_b) AS a, greatest(id_a, id_b) AS b
   FROM pairs
-  WHERE {id_a} IS NOT NULL AND {id_b} IS NOT NULL AND {id_a} <> {id_b}
+  WHERE id_a IS NOT NULL AND id_b IS NOT NULL AND id_a <> id_b
 ),
 tri AS (
   SELECT e1.a AS a, e1.b AS b, e2.b AS c
@@ -396,10 +390,7 @@ ORDER BY {id_out}
 
 def pagerank_sql(
     pairs_sql: str,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     iterations: int = DEFAULT_ITERATIONS,
-    damping: float = DEFAULT_DAMPING,
     id_out: str = "id",
     weight: str | None = None,
 ) -> str:
@@ -410,7 +401,7 @@ def pagerank_sql(
     recursive CTEs disallow).  ``weight`` mirrors the operator's
     weighted update (share = r·w/Σw, max-merge of duplicate edge
     spellings)."""
-    teleport = f"({1.0 - damping:.17g} / (SELECT n FROM n))"
+    teleport = f"({1.0 - DEFAULT_DAMPING:.17g} / (SELECT n FROM n))"
     share = (
         "r{k}.r / deg.degree"
         if weight is None
@@ -420,7 +411,7 @@ def pagerank_sql(
     for k in range(iterations):
         steps.append(
             f"r{k + 1} AS (\n"
-            f"  SELECT deg.id, {teleport} + {damping:.17g} * "
+            f"  SELECT deg.id, {teleport} + {DEFAULT_DAMPING:.17g} * "
             f"coalesce(s.contrib, 0.0) AS r\n"
             f"  FROM deg LEFT JOIN (\n"
             f"    SELECT e.dst AS id, sum({share.format(k=k)}) AS contrib\n"
@@ -432,9 +423,9 @@ def pagerank_sql(
     chain = ",\n".join(steps)
     if weight is None:
         fwd = (
-            f"SELECT {id_a} AS src, {id_b} AS dst FROM pairs\n"
-            f"  WHERE {id_a} IS NOT NULL AND {id_b} IS NOT NULL "
-            f"AND {id_a} <> {id_b}"
+            "SELECT id_a AS src, id_b AS dst FROM pairs\n"
+            "  WHERE id_a IS NOT NULL AND id_b IS NOT NULL "
+            "AND id_a <> id_b"
         )
         edges = (
             "SELECT DISTINCT src, dst FROM (\n"
@@ -444,9 +435,9 @@ def pagerank_sql(
         deg = "SELECT src AS id, count(*) AS degree FROM edges GROUP BY src"
     else:
         fwd = (
-            f"SELECT {id_a} AS src, {id_b} AS dst, {weight} AS w FROM pairs\n"
-            f"  WHERE {id_a} IS NOT NULL AND {id_b} IS NOT NULL "
-            f"AND {id_a} <> {id_b}"
+            f"SELECT id_a AS src, id_b AS dst, {weight} AS w FROM pairs\n"
+            f"  WHERE id_a IS NOT NULL AND id_b IS NOT NULL "
+            f"AND id_a <> id_b"
         )
         edges = (
             "SELECT src, dst, max(w) AS w FROM (\n"
@@ -548,20 +539,14 @@ def k_core(
     )
 
 
-def k_core_sql(
-    pairs_sql: str,
-    k: int = 2,
-    iterations: int = 6,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    id_out: str = "id",
-) -> str:
-    """DuckDB twin of :func:`k_core` — the same peel rounds unrolled
+def k_core_sql(pairs_sql: str, id_out: str = "id") -> str:
+    """DuckDB twin of :func:`k_core` at its defaults (k = 2, 6 peel
+    rounds) — the same peel rounds unrolled
     as chained MATERIALIZED CTEs (each round's edge relation is
     referenced three times — two degree legs + the next filter — and
     an inlined chain re-evaluates exponentially, the MMR lesson)."""
     steps = []
-    for t in range(iterations):
+    for t in range(6):
         steps.append(
             f"d{t} AS MATERIALIZED (\n"
             f"  SELECT id, count(*) AS degree FROM (\n"
@@ -569,7 +554,7 @@ def k_core_sql(
             f"    UNION ALL SELECT __b AS id FROM e{t}\n"
             f"  ) GROUP BY id\n"
             f"), kset{t} AS MATERIALIZED (\n"
-            f"  SELECT id FROM d{t} WHERE degree >= {k}\n"
+            f"  SELECT id FROM d{t} WHERE degree >= 2\n"
             f"), e{t + 1} AS MATERIALIZED (\n"
             f"  SELECT e{t}.* FROM e{t}\n"
             f"  JOIN kset{t} ka ON e{t}.__a = ka.id\n"
@@ -579,14 +564,14 @@ def k_core_sql(
     chain = ",\n".join(steps)
     return f"""
 WITH canon AS MATERIALIZED (
-  SELECT DISTINCT least({id_a}, {id_b}) AS __a,
-                  greatest({id_a}, {id_b}) AS __b
+  SELECT DISTINCT least(id_a, id_b) AS __a,
+                  greatest(id_a, id_b) AS __b
   FROM ({pairs_sql})
-  WHERE {id_a} IS NOT NULL AND {id_b} IS NOT NULL AND {id_a} <> {id_b}
+  WHERE id_a IS NOT NULL AND id_b IS NOT NULL AND id_a <> id_b
 ), e0 AS MATERIALIZED (SELECT * FROM canon),
 {chain}
 SELECT id AS {id_out}, CAST(count(*) AS BIGINT) AS degree FROM (
-  SELECT __a AS id FROM e{iterations}
-  UNION ALL SELECT __b AS id FROM e{iterations}
+  SELECT __a AS id FROM e6
+  UNION ALL SELECT __b AS id FROM e6
 ) GROUP BY id ORDER BY id
 """

@@ -4,7 +4,8 @@ a composition of existing relational ops, no Python in the data path).
 
 Semantics: for every query row ``(by, t)`` find the series points
 ``prev`` (greatest ts ≤ t) and ``next`` (smallest ts ≥ t) within the
-same ``by`` group and return the linear interpolation::
+same ``by`` group (``by`` is ``user_id``, the timestamps ``ts``) and
+return the linear interpolation::
 
     v(t) = prev.v + (next.v − prev.v) · (t − prev.ts) / (next.ts − prev.ts)
 
@@ -33,41 +34,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import cols_list
 
 
 def interpolate_join(
     queries: DataFrame,
     series: DataFrame,
-    on: str = "ts",
-    by: str | list[str] = "user_id",
-    value_col: str = "value",
-    out_col: str = "interp_value",
     extrapolate: str = "clamp",
 ) -> DataFrame:
-    """Attach ``out_col`` = the series' linearly-interpolated value at
-    each query row's timestamp (see module docstring).  Duplicate
-    series points at one ``(by, on)`` instant collapse
+    """Attach ``interp_value`` = the series' linearly-interpolated
+    value at each query row's ``ts`` (see module docstring).  Duplicate
+    series points at one ``(user_id, ts)`` instant collapse
     deterministically to the greatest value first."""
     if extrapolate not in ("clamp", "null"):
         raise ValueError("extrapolate must be 'clamp' or 'null'")
-    by_cols = cols_list(by)
 
     # a series point with NULL ts belongs to no position on the time
     # axis — drop it (same reasoning as asof_join's right-side filter)
-    series = series.filter(F.col(on).isNotNull())
+    series = series.filter(F.col("ts").isNotNull())
     # cast("timestamp") first: parquet TIMESTAMP_NTZ columns reject
     # unix_micros directly, and the session pins UTC so the cast is
     # value-preserving.
     s = series.select(
-        *by_cols,
-        F.col(on),
+        "user_id",
+        F.col("ts"),
         F.struct(
-            F.unix_micros(F.col(on).cast("timestamp")).alias("__t"),
-            F.col(value_col).cast("double").alias("__v"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("__t"),
+            F.col("value").cast("double").alias("__v"),
         ).alias("__sp"),
     )
-    s = s.groupBy(*by_cols, on).agg(F.max("__sp").alias("__sp"))
+    s = s.groupBy("user_id", "ts").agg(F.max("__sp").alias("__sp"))
 
     q = queries.withColumn("__side", F.lit(1))
     s = s.withColumn("__side", F.lit(0))
@@ -77,13 +72,13 @@ def interpolate_join(
     # 0 < 1) in BOTH directions, so an exact-timestamp hit sees the
     # point as its prev AND its next.
     wb = (
-        Window.partitionBy(*by_cols)
-        .orderBy(F.asc(on), F.asc("__side"))
+        Window.partitionBy("user_id")
+        .orderBy(F.asc("ts"), F.asc("__side"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     wf = (
-        Window.partitionBy(*by_cols)
-        .orderBy(F.desc(on), F.asc("__side"))
+        Window.partitionBy("user_id")
+        .orderBy(F.desc("ts"), F.asc("__side"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     m = (
@@ -92,7 +87,7 @@ def interpolate_join(
         .filter(F.col("__side") == 1)
     )
 
-    t = F.unix_micros(F.col(on).cast("timestamp"))
+    t = F.unix_micros(F.col("ts").cast("timestamp"))
     pt, pv = F.col("__prev.__t"), F.col("__prev.__v")
     nt, nv = F.col("__next.__t"), F.col("__next.__v")
     lerp = pv + (nv - pv) * (t - pt) / (nt - pt)
@@ -104,26 +99,19 @@ def interpolate_join(
     # NULL ts / NULL key → NULL (module docstring): without this guard
     # a NULL-ts query row clamps to the series extremum and NULL keys
     # interpolate against the NULL-key "group"
-    valid = F.col(on).isNotNull()
-    for c in by_cols:
-        valid = valid & F.col(c).isNotNull()
+    valid = F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     return m.select(
-        *queries.columns, F.round(F.when(valid, interp), 6).alias(out_col)
+        *queries.columns, F.round(F.when(valid, interp), 6).alias("interp_value")
     )
 
 
 def interpolate_join_sql(
     queries_sql: str,
     series_sql: str,
-    on: str = "ts",
-    by: str = "user_id",
-    value_col: str = "value",
-    out_col: str = "interp_value",
     query_cols: str = "q.*",
-    extrapolate: str = "clamp",
 ) -> str:
-    """DuckDB twin: backward + forward native ASOF joins feeding the
-    SAME lerp expression (``epoch_us`` integers, identical operation
+    """DuckDB twin of the default (``extrapolate="clamp"``) join:
+    backward + forward native ASOF joins feeding the SAME lerp expression (``epoch_us`` integers, identical operation
     order) as :func:`interpolate_join`.  ``query_cols`` defaults to
     ``q.*`` — the Spark twin returns exactly the query columns, and a
     bare ``*`` would leak all three relations' duplicate ts/key
@@ -131,18 +119,12 @@ def interpolate_join_sql(
     aggregates it once, not once per ASOF side (DuckDB accepts WITH
     inside a derived table, so panels can still wrap this SQL)."""
     dedup = (
-        f"SELECT {by}, {on}, max(CAST({value_col} AS DOUBLE)) AS __v "
-        f"FROM ({series_sql}) GROUP BY {by}, {on}"
+        f"SELECT user_id, ts, max(CAST(value AS DOUBLE)) AS __v "
+        f"FROM ({series_sql}) GROUP BY user_id, ts"
     )
     lerp = (
-        f"p.__v + (n.__v - p.__v) * (epoch_us(q.{on}) - epoch_us(p.{on}))"
-        f" / (epoch_us(n.{on}) - epoch_us(p.{on}))"
-    )
-    clamp = (
-        f"WHEN p.{on} IS NOT NULL THEN p.__v "
-        f"WHEN n.{on} IS NOT NULL THEN n.__v "
-        if extrapolate == "clamp"
-        else ""
+        "p.__v + (n.__v - p.__v) * (epoch_us(q.ts) - epoch_us(p.ts))"
+        " / (epoch_us(n.ts) - epoch_us(p.ts))"
     )
     return (
         f"WITH __dedup AS ({dedup}) "
@@ -151,14 +133,16 @@ def interpolate_join_sql(
         # query ts past the series and hands it the extremum point, so
         # a single-point series would "clamp" a NULL timestamp — the
         # engine's contract is NULL in, NULL out
-        f"WHEN q.{on} IS NULL THEN NULL "
-        f"WHEN p.{on} IS NOT NULL AND n.{on} IS NOT NULL "
-        f"  AND n.{on} <> p.{on} THEN {lerp} "
-        f"WHEN p.{on} IS NOT NULL AND n.{on} IS NOT NULL THEN p.__v "
-        f"{clamp}END, 6) + 0 AS {out_col} "
+        f"WHEN q.ts IS NULL THEN NULL "
+        f"WHEN p.ts IS NOT NULL AND n.ts IS NOT NULL "
+        f"  AND n.ts <> p.ts THEN {lerp} "
+        f"WHEN p.ts IS NOT NULL AND n.ts IS NOT NULL THEN p.__v "
+        "WHEN p.ts IS NOT NULL THEN p.__v "
+        "WHEN n.ts IS NOT NULL THEN n.__v "
+        "END, 6) + 0 AS interp_value "
         f"FROM ({queries_sql}) q "
         f"ASOF LEFT JOIN __dedup p "
-        f"  ON q.{by} = p.{by} AND q.{on} >= p.{on} "
+        f"  ON q.user_id = p.user_id AND q.ts >= p.ts "
         f"ASOF LEFT JOIN __dedup n "
-        f"  ON q.{by} = n.{by} AND q.{on} <= n.{on}"
+        f"  ON q.user_id = n.user_id AND q.ts <= n.ts"
     )

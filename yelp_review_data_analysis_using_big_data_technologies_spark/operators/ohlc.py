@@ -86,36 +86,28 @@ def ohlc_bars(
     )
 
 
-def ohlc_bars_sql(
-    keys: Sequence[str] = ("event_type",),
-    table: str = "events",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    bucket: str = "hour",
-) -> str:
+def ohlc_bars_sql(table: str = "events") -> str:
     """DuckDB twin of :func:`ohlc_bars` — the deliberately naive
     row_number formulation (QUALIFY-style argmin/argmax) against
     which the one-pass min(struct) plan is verified."""
-    ks = ", ".join(keys)
     return f"""
 WITH e AS (
-  SELECT {ks}, date_trunc('{bucket}', {ts_col}) AS bucket_ts,
-         {ts_col} AS __ts,
-         COALESCE({id_col}, {_NULL_ID_SENTINEL}) AS __id,
-         {value_col} AS __v
+  SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
+         ts AS __ts,
+         COALESCE(event_id, {_NULL_ID_SENTINEL}) AS __id,
+         value AS __v
   FROM {table}
-  WHERE {ts_col} IS NOT NULL AND {value_col} IS NOT NULL
-        AND isfinite({value_col})
+  WHERE ts IS NOT NULL AND value IS NOT NULL
+        AND isfinite(value)
 ), r AS (
   SELECT *,
-    row_number() OVER (PARTITION BY {ks}, bucket_ts
+    row_number() OVER (PARTITION BY event_type, bucket_ts
                        ORDER BY __ts, __id, __v) AS __ra,
-    row_number() OVER (PARTITION BY {ks}, bucket_ts
+    row_number() OVER (PARTITION BY event_type, bucket_ts
                        ORDER BY __ts DESC, __id DESC, __v DESC) AS __rd
   FROM e
 )
-SELECT {ks}, bucket_ts,
+SELECT event_type, bucket_ts,
        max(CASE WHEN __ra = 1 THEN __v END) AS open,
        max(__v) AS high,
        min(__v) AS low,
@@ -123,5 +115,5 @@ SELECT {ks}, bucket_ts,
        count(*) AS n_events,
        round(sum(__v), 6) + 0 AS total_value,
        round(avg(__v), 6) + 0 AS mean_value
-FROM r GROUP BY ALL ORDER BY {ks}, bucket_ts
+FROM r GROUP BY ALL ORDER BY event_type, bucket_ts
 """

@@ -119,7 +119,6 @@ def interval_overlap_join(
 def range_join(
     points: DataFrame,
     intervals: DataFrame,
-    point: str = "ts",
     start: str = "start",
     end: str = "end",
     by: str | list[str] | None = None,
@@ -127,7 +126,7 @@ def range_join(
     how: str = "inner",
 ) -> DataFrame:
     """Join each ``points`` row to every ``intervals`` row whose
-    ``[start, end]`` contains it (closed on both ends), optionally
+    ``[start, end]`` contains its ``ts`` (closed on both ends), optionally
     key-scoped by ``by``.  ``how`` may be ``inner`` or ``left`` (left
     keeps pointless points with NULL interval columns)."""
     if how not in ("inner", "left"):
@@ -157,14 +156,14 @@ def range_join(
         pts = points.withColumn(
             "__pid", F.monotonically_increasing_id()
         ).localCheckpoint(eager=True)
-    p = pts.withColumn("__b", _bucket(point))
+    p = pts.withColumn("__b", _bucket("ts"))
     i = intervals.withColumn(
         "__b",
         F.explode(F.sequence(_bucket(start), _bucket(end))),
     )
     cond = [p["__b"] == i["__b"]] + [p[c] == i[c] for c in by_cols]
     joined = p.join(i, cond, "inner").where(
-        p[point].between(i[start], i[end])
+        p["ts"].between(i[start], i[end])
     )
     out_cols = (
         [p[c] for c in points.columns]

@@ -93,14 +93,12 @@ def distributed_rank_sql(
     order_col: str,
     select_cols: Sequence[str],
     table: str,
-    descending: bool = True,
 ) -> str:
     """DuckDB twin — the NAIVE window formulation the decomposition
-    must equal (rank/dense_rank/percent_rank, NULLs last)."""
+    must equal (rank/dense_rank/percent_rank, descending, NULLs last)."""
     ks = ", ".join(keys)
     cols = ", ".join(select_cols)
-    d = "DESC" if descending else "ASC"
-    over = f"(PARTITION BY {ks} ORDER BY {order_col} {d} NULLS LAST)"
+    over = f"(PARTITION BY {ks} ORDER BY {order_col} DESC NULLS LAST)"
     return f"""
 SELECT {cols},
        rank() OVER {over} AS rnk,

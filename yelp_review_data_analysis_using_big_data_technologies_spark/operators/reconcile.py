@@ -125,12 +125,11 @@ def diff_summary(
     left: DataFrame,
     right: DataFrame,
     key_cols: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """One row per status with its key count — the assertion surface
     (``added = expected_inserts AND changed = expected_updates AND
     removed = 0`` is the promotion gate a backfill job runs)."""
-    diff = table_diff(left, right, key_cols, compare_cols)
+    diff = table_diff(left, right, key_cols)
     return (
         diff.groupBy("status")
         .agg(F.count(F.lit(1)).alias("n"))

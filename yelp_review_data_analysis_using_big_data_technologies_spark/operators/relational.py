@@ -188,9 +188,6 @@ def scd2_intervals(
     keys: Sequence[str],
     ts_col: str,
     tiebreak: Sequence[str] = (),
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Slowly-changing-dimension type-2 history: every change row
     becomes a VERSION with a validity interval — ``valid_from`` is the
@@ -212,7 +209,7 @@ def scd2_intervals(
     order = [F.asc(ts_col)] + [F.asc(c) for c in tiebreak]
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
-        df.withColumn(valid_from, F.col(ts_col))
-        .withColumn(valid_to, F.lead(ts_col).over(w))
-        .withColumn(current_col, F.col(valid_to).isNull())
+        df.withColumn("valid_from", F.col(ts_col))
+        .withColumn("valid_to", F.lead(ts_col).over(w))
+        .withColumn("is_current", F.col("valid_to").isNull())
     )

@@ -36,8 +36,6 @@ another decimal-width negotiation.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,24 +45,18 @@ from pyspark.sql import functions as F
 ANCHOR = "2024-01-01 00:00:00"
 
 
-def trend_regression(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    anchor: str = ANCHOR,
-) -> DataFrame:
-    """Per-key OLS of ``value_col`` on time →
-    ``(keys…, n, slope_per_day, intercept, r2)`` ordered by keys.
+def trend_regression(events: DataFrame) -> DataFrame:
+    """Per-``event_type`` OLS of ``value`` on ``ts`` →
+    ``(event_type, n, slope_per_day, intercept, r2)`` ordered by key.
 
     ``slope_per_day`` is the per-microsecond OLS slope scaled by
     8.64·10¹⁰ (a human-readable drift rate); ``intercept`` is the
-    fitted value at the anchor; ``r2`` the squared correlation.  Rows
+    fitted value at ``ANCHOR``; ``r2`` the squared correlation.  Rows
     with NULL ts or NULL/non-finite/out-of-domain (|y| ≥ 1e12) values
     drop.  Keys with zero
     x-variance (all events at one instant) or zero y-variance report
     NULL slope / r² rather than a division blow-up."""
-    v = F.col(value_col)
+    v = F.col("value")
     # |y| < 1e12 is the DECIMAL(19,6) domain: a finite-but-enormous
     # value (1e300) passes a NaN/Inf filter and then ABORTS the whole
     # job at the ANSI decimal cast (the r8 extreme-magnitude lesson) —
@@ -82,15 +74,15 @@ def trend_regression(
     # decay.py idiom: the loader yields TIMESTAMP_NTZ, which
     # unix_micros rejects, and the session pins UTC so the cast is
     # value-exact
-    x = F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(
-        F.lit(anchor).cast("timestamp")
+    x = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
+        F.lit(ANCHOR).cast("timestamp")
     )
-    ev = events.where(F.col(ts_col).isNotNull() & finite).select(
-        *keys,
+    ev = events.where(F.col("ts").isNotNull() & finite).select(
+        "event_type",
         x.cast("decimal(19,0)").alias("__x"),
         v.cast("decimal(19,6)").alias("__y"),
     )
-    sums = ev.groupBy(*keys).agg(
+    sums = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("__x").alias("__sx"),
         F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
@@ -108,7 +100,7 @@ def trend_regression(
     mean_x = sx / nd
     mean_y = sy / nd
     return sums.select(
-        *keys,
+        "event_type",
         "n",
         F.round(slope * 86400.0e6, 6).alias("slope_per_day"),
         F.round(F.when(den_x > 0, mean_y - (num / den_x) * mean_x), 6).alias(
@@ -117,38 +109,31 @@ def trend_regression(
         F.round(
             F.when((den_x > 0) & (den_y > 0), num * num / (den_x * den_y)), 6
         ).alias("r2"),
-    ).orderBy(*keys)
+    ).orderBy("event_type")
 
 
-def trend_regression_sql(
-    keys: Sequence[str] = ("event_type",),
-    table: str = "events",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    anchor: str = ANCHOR,
-) -> str:
+def trend_regression_sql() -> str:
     """DuckDB twin of :func:`trend_regression` — the same exact
     sufficient statistics (``epoch_us`` ≡ Spark ``unix_micros``; the
     HUGEINT/decimal sums are cast to BIGINT-free doubles only at the
     final scalars, in the same IEEE order)."""
-    ks = ", ".join(keys)
     return f"""
 WITH ev AS (
-  SELECT {ks},
-         CAST(epoch_us({ts_col}) - epoch_us(TIMESTAMP '{anchor}')
+  SELECT event_type,
+         CAST(epoch_us(ts) - epoch_us(TIMESTAMP '{ANCHOR}')
               AS DECIMAL(19,0)) AS __x,
-         CAST({value_col} AS DECIMAL(19,6)) AS __y
-  FROM {table}
-  WHERE {ts_col} IS NOT NULL AND {value_col} IS NOT NULL
-        AND isfinite({value_col}) AND abs({value_col}) < 1e12
+         CAST(value AS DECIMAL(19,6)) AS __y
+  FROM events
+  WHERE ts IS NOT NULL AND value IS NOT NULL
+        AND isfinite(value) AND abs(value) < 1e12
 ), sums AS (
-  SELECT {ks}, count(*) AS n,
+  SELECT event_type, count(*) AS n,
          sum(__x) AS __sx, sum(__x * __x) AS __sxx,
          sum(__y) AS __sy, sum(__y * __y) AS __syy,
          sum(__x * __y) AS __sxy
-  FROM ev GROUP BY {ks}
+  FROM ev GROUP BY event_type
 ), d AS (
-  SELECT {ks}, n,
+  SELECT event_type, n,
          CAST(n AS DOUBLE) * CAST(__sxy AS DOUBLE)
            - CAST(__sx AS DOUBLE) * CAST(__sy AS DOUBLE) AS num,
          CAST(n AS DOUBLE) * CAST(__sxx AS DOUBLE)
@@ -159,12 +144,12 @@ WITH ev AS (
          CAST(__sy AS DOUBLE) / CAST(n AS DOUBLE) AS mean_y
   FROM sums
 )
-SELECT {ks}, n,
+SELECT event_type, n,
        round(CASE WHEN den_x > 0 THEN num / den_x END * 86400.0e6, 6)
          AS slope_per_day,
        round(CASE WHEN den_x > 0
              THEN mean_y - (num / den_x) * mean_x END, 6) AS intercept,
        round(CASE WHEN den_x > 0 AND den_y > 0
              THEN num * num / (den_x * den_y) END, 6) AS r2
-FROM d ORDER BY {ks}
+FROM d ORDER BY event_type
 """

@@ -113,7 +113,7 @@ def doc_unicode_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.normalize import normalize_text
 
     docs = load_table(spark, sf_dir, "documents")
-    normed = normalize_text(docs, col="text", form="NFC", flag_col="changed")
+    normed = normalize_text(docs, form="NFC", flag_col="changed")
     return normed.select(
         "doc_id", F.sha2(F.col("text"), 256).alias("nfc_hash"), "changed"
     )
@@ -1161,7 +1161,7 @@ def corpus_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load_embeddings(spark, sf_dir)
     # 3×4 planes pinned for the static SQL twin (production default
     # derives n_planes from corpus size — see vec_cosine_near_dup).
-    pairs = lvec.cosine_near_dup_pairs(emb, n_bands=3, n_planes=4)
+    pairs = lvec.cosine_near_dup_pairs(emb, n_planes=4)
     losers = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     return (
         docs.join(losers, on="doc_id", how="left_anti")
@@ -2011,7 +2011,7 @@ def vec_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     if the fixtures ever outgrow that, the twin must re-pin (or the
     entry falls back to :func:`vec_cosine_near_dup_pinned`)."""
     return lvec.cosine_near_dup_pairs(
-        _load_embeddings(spark, sf_dir), n_bands=3
+        _load_embeddings(spark, sf_dir)
     ).orderBy("id_a", "id_b")
 
 
@@ -2021,7 +2021,7 @@ def vec_cosine_near_dup_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
     past the driver window so dial changes to the headline can't
     silently desync from the SQL."""
     return lvec.cosine_near_dup_pairs(
-        _load_embeddings(spark, sf_dir), n_bands=3, n_planes=4
+        _load_embeddings(spark, sf_dir), n_planes=4
     ).orderBy("id_a", "id_b")
 
 
@@ -2151,7 +2151,7 @@ def doc_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.expr(_CORPUS_PRED))
     bench = docs.filter(F.expr(_BENCH_PRED))
     return ldec.contamination_overlap(
-        corpus, bench, shingle_n=3, min_shared=2
+        corpus, bench, min_shared=2
     ).orderBy("doc_id")
 
 
@@ -2402,7 +2402,7 @@ def _training_freeze_sql(balance: str = "lang") -> str:
     kept_cluster = (
         "SELECT doc_id, lang, n_tokens FROM ("
         + lsmp.cluster_balance_sample_sql(
-            "good", n_cells=8, cols="doc_id, lang, n_tokens"
+            "good", cols="doc_id, lang, n_tokens"
         )
         + ")"
     )
@@ -2435,7 +2435,6 @@ def _training_freeze_sql(balance: str = "lang") -> str:
                 _MIXTURE_WEIGHTS,
                 table="good",
                 domain_expr="lang",
-                id_expr="doc_id",
                 tokens_expr="n_tokens",
                 cols="doc_id, lang, n_tokens",
             )
@@ -2487,7 +2486,6 @@ def _freeze_audit_sql() -> str:
             _MIXTURE_WEIGHTS,
             table="good",
             domain_expr="lang",
-            id_expr="doc_id",
             tokens_expr="n_tokens",
             cols="doc_id, lang, n_tokens",
         )
@@ -2688,8 +2686,8 @@ ORDER BY s.split
         "ORDER BY grp, key"
     ),
     "corpus_freeze_audit": _freeze_audit_sql(),
-    "vocab_bpe_merges": lbpe.bpe_merge_steps_sql(k=6),
-    "vocab_bpe_encode": lbpe.bpe_encode_stats_sql(k=6),
+    "vocab_bpe_merges": lbpe.bpe_merge_steps_sql(),
+    "vocab_bpe_encode": lbpe.bpe_encode_stats_sql(),
     "corpus_freeze_clustered": (
         _training_freeze_sql(balance="cluster") + " ORDER BY position"
     ),
@@ -2699,7 +2697,7 @@ ORDER BY s.split
         f"  FROM documents WHERE {_quality_score_sql()} > 0.5"
         ") SELECT doc_id, lang, n_tokens, cluster_id FROM ("
         + lsmp.cluster_balance_sample_sql(
-            "good", n_cells=8, cols="doc_id, lang, n_tokens, cluster_id"
+            "good", cols="doc_id, lang, n_tokens, cluster_id"
         )
         + ") ORDER BY doc_id"
     ),
@@ -2771,7 +2769,7 @@ ORDER BY s.split
         "/ count(*), 6) AS dup_ratio "
         "FROM __r GROUP BY doc_id ORDER BY doc_id"
     ),
-    "doc_pack_bins": lpk.pack_bins_sql(budget=512),
+    "doc_pack_bins": lpk.pack_bins_sql(),
     "doc_weighted_sample": (
         "SELECT doc_id, n_chars, round(priority, 6) AS priority FROM ("
         + lsmp.weighted_take_sql(
@@ -2796,13 +2794,11 @@ ORDER BY s.split
         ldec.decontaminate_sql(
             corpus_where=_CORPUS_PRED.replace("<>", "!="),
             benchmark_where=_BENCH_PRED,
-            shingle_n=3,
-            min_shared=2,
         )
         + " ORDER BY doc_id"
     ),
     "doc_repetition_profile": (
-        lq.repetition_profile_sql(shingle_n=3) + " ORDER BY doc_id"
+        lq.repetition_profile_sql() + " ORDER BY doc_id"
     ),
     "doc_pii_redact": (
         f"SELECT doc_id, {_PII_CLEAN_SQL} AS clean_text, "
@@ -2824,7 +2820,7 @@ ORDER BY s.split
         + lsmp.take_per_stratum_sql("documents", "lang", _TAKE_K)
         + ") GROUP BY 2 ORDER BY op, grp"
     ),
-    "doc_tfidf_top_terms": ltm.tf_idf_top_terms_sql(k=3),
+    "doc_tfidf_top_terms": ltm.tf_idf_top_terms_sql(),
     "doc_token_chunks": ltm.token_chunks_sql(chunk=64, stride=48),
     "doc_lm_quality": ltm.bigram_lm_nll_sql(),
     "doc_gopher_rules": lq.gopher_rules_sql(),
@@ -3012,7 +3008,7 @@ unioned AS (
   WHERE {VEC_OK_SQL}
 ), """,
     ),
-    "doc_vocab_coverage": ltm.vocab_coverage_sql(v=50),
+    "doc_vocab_coverage": ltm.vocab_coverage_sql(),
     "doc_hybrid_search_rrf": f"""
 WITH lex AS ({ltm.bm25_topk_sql(_BM25_QUERY, k=_HYBRID_LIST_K)}),
 vec AS (

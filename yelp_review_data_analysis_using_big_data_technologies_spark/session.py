@@ -23,7 +23,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    durable_catalog: bool = False,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
@@ -31,14 +30,8 @@ def get_spark(
     default to ``local[$SPARK_GRAFT_CPUS]`` (all cores).  Shuffle
     partitions default to the parallelism of the master — at 100 TB
     the caller overrides via ``shuffle_partitions`` or lets AQE
-    coalesce from a high initial number.
-
-    ``durable_catalog=True`` backs the session catalog with the Hive
-    metastore (embedded Derby locally; point ``hive.metastore.uris``
-    at a service for shared deployments) so ``sources.catalog``
-    tables/views survive the session — the Glue-Data-Catalog role.
-    Catalog implementation is fixed at session creation: the flag has
-    no effect if a session already exists (getOrCreate reuses it).
+    coalesce from a high initial number.  ``extra_conf`` entries are
+    applied last (``sources.catalog`` documents the Hive-catalog one).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
@@ -78,8 +71,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
-    if durable_catalog:
-        builder = builder.config("spark.sql.catalogImplementation", "hive")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

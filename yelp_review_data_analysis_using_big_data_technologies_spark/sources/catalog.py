@@ -18,7 +18,8 @@ metadata survives the session, via the session catalog's metastore:
   either of the above.
 
 Durability needs a real metastore: run the session with
-``spark.sql.catalogImplementation=hive`` (embedded Derby writes
+``spark.sql.catalogImplementation=hive`` (``get_spark``'s
+``extra_conf``; embedded Derby writes
 ``metastore_db/`` next to the warehouse dir; a shared deployment
 points ``hive.metastore.uris`` at a service).  Under the default
 in-memory catalog everything here still works, scoped to the session

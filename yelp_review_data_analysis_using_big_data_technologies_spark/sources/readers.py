@@ -149,22 +149,16 @@ def read_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = None,
-    header: bool = True,
-    multi_line: bool = True,
 ) -> DataFrame:
     """CSV scan.  ``inferSchema`` deliberately not exposed — pass a schema.
 
-    ``multi_line`` (default on) reassembles quoted fields carrying
-    embedded newlines — without it every such field SPLITS THE ROW
-    (the r8 quoting probe lost rows round-tripping nation names with
-    ``\\n``).  The cost at scale: multiLine files are parsed per-FILE,
-    not per-line-split, so a single giant CSV loses intra-file
-    parallelism.  Pass ``multi_line=False`` only for corpora
-    guaranteed newline-free, where per-split parallelism matters more
-    than correctness on hostile strings."""
-    reader = (
-        spark.read.option("header", header).option("multiLine", multi_line)
-    )
+    The first line is the header, and ``multiLine`` reassembles quoted
+    fields carrying embedded newlines — without it every such field
+    SPLITS THE ROW (the r8 quoting probe lost rows round-tripping
+    nation names with ``\\n``).  The cost at scale: multiLine files
+    are parsed per-FILE, not per-line-split, so a single giant CSV
+    loses intra-file parallelism."""
+    reader = spark.read.option("header", True).option("multiLine", True)
     if schema is not None:
         reader = reader.schema(schema)
     return reader.csv(path)
@@ -235,17 +229,13 @@ def scratch_dir(name: str, sf_dir: str) -> str:
     )
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """The engine's catalog layer (S6): replaces Glue crawler + Athena
     (reference main.tf:28-38) with session temp views so ``spark.sql``
     can serve the ad-hoc SQL role."""
-    for name, df in load_tables(spark, sf_dir, names).items():
+    for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)

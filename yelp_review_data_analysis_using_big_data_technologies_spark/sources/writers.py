@@ -122,62 +122,17 @@ def overwrite_partitions_dynamic(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def compact_partitions(
-    spark,
-    path: str,
-    partition_by: list[str],
-    files_per_partition: int = 1,
-) -> None:
+def compact_partitions(spark, path: str, partition_by: list[str]) -> None:
     """Small-file compaction: rewrite each partition directory into
-    ``files_per_partition`` files.  Hash-repartitioning on the
-    partition columns co-locates each partition value in one task (→
-    one output file per directory); for >1, a row-hash salt fans each
-    value out over that many tasks.  Streaming/incremental sinks
-    accrete small files; scans pay for them in task-launch overhead
-    and footer reads — compaction is routine table maintenance at
-    scale, rewritten in place via dynamic partition overwrite."""
+    one file.  Hash-repartitioning on the partition columns co-locates
+    each partition value in one task (→ one output file per
+    directory).  Streaming/incremental sinks accrete small files;
+    scans pay for them in task-launch overhead and footer reads —
+    compaction is routine table maintenance at scale, rewritten in
+    place via dynamic partition overwrite."""
     _validate_path(path)
     df = spark.read.parquet(path)
-    keys = [F.col(c) for c in partition_by]
-    if files_per_partition <= 1:
-        compacted = df.repartition(*keys)
-    else:
-        # salt only over HASHABLE columns: F.hash rejects MapType
-        # (and maps nested in structs/arrays), and the salt needs
-        # distribution, not a full-row fingerprint.  All-map tables
-        # fall back to a uniform random salt — still deterministic
-        # file COUNT per directory, which is all compaction promises.
-        def _hashable(dt) -> bool:
-            from pyspark.sql.types import ArrayType, MapType, StructType
-
-            if isinstance(dt, MapType):
-                return False
-            if isinstance(dt, ArrayType):
-                return _hashable(dt.elementType)
-            if isinstance(dt, StructType):
-                return all(_hashable(f.dataType) for f in dt.fields)
-            return True
-
-        cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
-        salt_src = (
-            F.hash(*[F.col(c) for c in cols])
-            if cols
-            else F.hash(F.monotonically_increasing_id())
-        )
-        salt = F.pmod(salt_src, F.lit(files_per_partition))
-        compacted = (
-            df.withColumn("__salt", salt)
-            .repartition(*keys, F.col("__salt"))
-            .drop("__salt")
-        )
-        if not cols:
-            # monotonically_increasing_id is nondeterministic under
-            # task retry (SPARK-23207): pin the salted assignment the
-            # same way skew.with_salt does, so a retried upstream task
-            # cannot re-deal rows across output files mid-write.  (The
-            # scan above is a direct parquet read today, but the
-            # contract shouldn't depend on that staying true.)
-            compacted = compacted.localCheckpoint(eager=True)
+    compacted = df.repartition(*[F.col(c) for c in partition_by])
     overwrite_partitions_dynamic(compacted, path, partition_by)
 
 
@@ -452,7 +407,6 @@ def write_bucketed(
     bucket_cols: list[str],
     sort_cols: list[str] | None = None,
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed (hash-clustered) parquet table for CO-LOCATED joins.
 
@@ -465,7 +419,7 @@ def write_bucketed(
     Bucketing requires the table catalog (``saveAsTable``); pass
     ``path`` to pin the files outside the warehouse dir."""
     _validate_path(table)
-    writer = df.write.mode(mode).format("parquet").bucketBy(
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(
         buckets, *bucket_cols
     )
     if sort_cols:
@@ -475,48 +429,27 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def write_json(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    coalesce: int | None = None,
-) -> None:
+def write_json(df: DataFrame, path: str) -> None:
     """JSON-lines sink — the inverse of the reference's ingest format
     (scripts/etl.py:21-27 reads Yelp JSON-lines); one JSON object per
-    line, one file per partition unless ``coalesce`` is given."""
+    line, one file per partition."""
     _validate_path(path)
-    if coalesce is not None:
-        df = df.coalesce(coalesce)
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    coalesce: int | None = None,
-) -> None:
+def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """ORC sink — the other columnar interchange format warehouses
     expect (Hive-ecosystem consumers read ORC where everything else
     reads parquet); same partitioning contract as
     :func:`write_parquet`."""
     _validate_path(path)
-    if coalesce is not None:
-        df = df.coalesce(coalesce)
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    header: bool = True,
-    coalesce: int | None = None,
-) -> None:
+def write_csv(df: DataFrame, path: str, coalesce: int | None = None) -> None:
     """CSV sink with header (S4; reference glue_job.py:88-92).
     ``coalesce=1`` reproduces the reference's single-file export but is
     opt-in — the default writes one file per partition.
@@ -532,8 +465,8 @@ def write_csv(
     if coalesce is not None:
         df = df.coalesce(coalesce)
     (
-        df.write.mode(mode)
-        .option("header", header)
+        df.write.mode("overwrite")
+        .option("header", True)
         .option("ignoreLeadingWhiteSpace", False)
         .option("ignoreTrailingWhiteSpace", False)
         .csv(path)

@@ -35,6 +35,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
+    BANDS,
+    NUM_HASHES,
+    SHINGLE_N,
+    THRESHOLD,
     band_key_array,
     dedup_against_corpus,
     match_banded_candidates,
@@ -155,21 +159,14 @@ def stream_dedup_ingest_to_parquet(
     stream: DataFrame,
     table: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_col: str = "ingest_batch",
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
 ) -> None:
     """Drain ``stream`` (``availableNow``) into the parquet corpus at
     ``table``, admitting per micro-batch only rows that are
 
-    1. not exact duplicates WITHIN the batch (keep the min-``id_col``
+    1. not exact duplicates WITHIN the batch (keep the min-``doc_id``
        copy — one window rank on the content hash), and
     2. neither exact (``sha2``) nor near (banded MinHash-LSH,
-       Jaccard ≥ ``threshold``) duplicates of the already-admitted
+       Jaccard ≥ ``THRESHOLD``) duplicates of the already-admitted
        corpus (:func:`llm.dedup.dedup_against_corpus`).
 
     The first batch bootstraps the table.  The bootstrap probe goes
@@ -183,50 +180,34 @@ def stream_dedup_ingest_to_parquet(
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(
-            id_col
+        w = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy(
+            "doc_id"
         )
         batch = (
             batch_df.withColumn("__rk", F.row_number().over(w))
             .filter(F.col("__rk") == 1)
             .drop("__rk")
         )
-        corpus = read_before(spark, table, batch_col, batch_id)
+        corpus = read_before(spark, table, "ingest_batch", batch_id)
         admitted = (
             batch
             if corpus is None
             else dedup_against_corpus(
-                corpus.drop(batch_col),
+                corpus.drop("ingest_batch"),
                 batch,
-                id_col=id_col,
-                text_col=text_col,
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_n=shingle_n,
-                threshold=threshold,
             )
         )
         # idempotent on replay: the batch owns its partition directory
         admitted.write.mode("overwrite").parquet(
-            f"{table}/{batch_col}={batch_id}"
+            f"{table}/ingest_batch={batch_id}"
         )
 
     drain(stream, checkpoint, _admit)
 
 
-def dedup_ingest_sql(
-    splits: tuple[int, ...] = (200, 350),
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_cols: str = "lang, n_chars",
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> str:
+def dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
     """DuckDB twin of a :func:`stream_dedup_ingest_to_parquet` run
-    whose micro-batches are the ``id_col`` ranges cut at ``splits``
+    whose micro-batches are the ``doc_id`` ranges cut at ``splits``
     (batch 0 = ids below ``splits[0]``, …, last batch = the rest):
     chained CTEs replay the sequential admission — batch k's exact and
     near predicates reference ONLY the union of earlier batches'
@@ -235,15 +216,7 @@ def dedup_ingest_sql(
     banded pair set (:func:`llm.dedup.near_dup_banded_sql`) to cross
     pairs whose ``id_a`` is admitted — sound because batches ascend in
     id and pairs carry ``id_a < id_b``."""
-    pairs = near_dup_banded_sql(
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        threshold=threshold,
-        table=table,
-        id_col=id_col,
-        text_col=text_col,
-    )
+    pairs = near_dup_banded_sql()
     bounds = [None, *splits, None]
     n_batches = len(splits) + 1
     ctes = [f"__pairs AS ({pairs})"]
@@ -252,40 +225,40 @@ def dedup_ingest_sql(
         lo, hi = bounds[k], bounds[k + 1]
         preds = []
         if lo is not None:
-            preds.append(f"{id_col} >= {lo}")
+            preds.append(f"doc_id >= {lo}")
         if hi is not None:
-            preds.append(f"{id_col} < {hi}")
+            preds.append(f"doc_id < {hi}")
         where = " AND ".join(preds) or "TRUE"
         # intra-batch exact dedup: keep the min-id copy
         ctes.append(
-            f"__d{k} AS (SELECT {id_col}, {text_col}, {out_cols} "
-            f"FROM {table} WHERE {where} "
-            f"QUALIFY row_number() OVER (PARTITION BY sha256({text_col}) "
-            f"ORDER BY {id_col}) = 1)"
+            f"__d{k} AS (SELECT doc_id, text, lang, n_chars "
+            f"FROM documents WHERE {where} "
+            f"QUALIFY row_number() OVER (PARTITION BY sha256(text) "
+            f"ORDER BY doc_id) = 1)"
         )
         if k == 0:
-            ctes.append(f"__a0 AS (SELECT * FROM __d0)")
+            ctes.append("__a0 AS (SELECT * FROM __d0)")
             admitted_union = "SELECT * FROM __a0"
         else:
             ctes.append(
                 f"__c{k} AS ({admitted_union}), "
                 f"__a{k} AS (SELECT d.* FROM __d{k} d "
                 f"WHERE NOT EXISTS (SELECT 1 FROM __c{k} c "
-                f"  WHERE sha256(c.{text_col}) = sha256(d.{text_col})) "
+                f"  WHERE sha256(c.text) = sha256(d.text)) "
                 f"AND NOT EXISTS (SELECT 1 FROM __pairs p "
-                f"  JOIN __c{k} c ON p.id_a = c.{id_col} "
-                f"  WHERE p.id_b = d.{id_col}))"
+                f"  JOIN __c{k} c ON p.id_a = c.doc_id "
+                f"  WHERE p.id_b = d.doc_id))"
             )
             admitted_union += f" UNION ALL SELECT * FROM __a{k}"
     tagged = " UNION ALL ".join(
-        f"SELECT {k} AS b, {id_col}, {out_cols} FROM __a{k}"
+        f"SELECT {k} AS b, doc_id, lang, n_chars FROM __a{k}"
         for k in range(n_batches)
     )
     return (
         "WITH "
         + ", ".join(ctes)
-        + f" SELECT CAST(b AS INTEGER) AS ingest_batch, {id_col}, {out_cols} "
-        + f"FROM ({tagged}) ORDER BY {id_col}"
+        + " SELECT CAST(b AS INTEGER) AS ingest_batch, doc_id, lang, n_chars "
+        + f"FROM ({tagged}) ORDER BY doc_id"
     )
 
 
@@ -294,20 +267,13 @@ def stream_doc_dedup_to_parquet(
     table: str,
     checkpoint: str,
     index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_col: str = "ingest_batch",
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
 ) -> None:
     """Drain ``stream`` (``availableNow``) into the parquet corpus at
     ``table`` under GLOBAL KEEP-FIRST doc-level near-dup semantics: a
     document is admitted iff no earlier-SEEN document — same batch
-    with a smaller ``id_col``, or any earlier batch, admitted or NOT —
+    with a smaller ``doc_id``, or any earlier batch, admitted or NOT —
     is an exact (``sha2``) or near (banded MinHash-LSH, Jaccard ≥
-    ``threshold``) duplicate of it.
+    ``THRESHOLD``) duplicate of it.
 
     This is deliberately a DIFFERENT contract from
     :func:`stream_dedup_ingest_to_parquet`, which admits against the
@@ -327,8 +293,8 @@ def stream_doc_dedup_to_parquet(
     (content hash, shingle set + size, band keys) to the side index,
     and each batch checks itself against the accumulated index.
     Exactly-once replay: both the corpus partition and the index
-    partition are overwritten per ``<batch_col>=<batch_id>`` directory
-    and reads filter ``batch_col < batch_id``, the same construction
+    partition are overwritten per ``ingest_batch=<batch_id>`` directory
+    and reads filter ``ingest_batch < batch_id``, the same construction
     as the admission ingest.
 
     Scale shape per batch at 100 TB: the index is scanned narrow (hash
@@ -343,10 +309,10 @@ def stream_doc_dedup_to_parquet(
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         feats = _delta_features(
-            batch_df, id_col, text_col, num_hashes, bands, shingle_n
+            batch_df, "doc_id", "text", NUM_HASHES, BANDS, SHINGLE_N
         )
         # intra-batch exact keep-first (NULL sha exempt: rn pinned 1)
-        w = Window.partitionBy("__sha").orderBy(id_col)
+        w = Window.partitionBy("__sha").orderBy("doc_id")
         exact_first = (
             feats.withColumn(
                 "__rn",
@@ -355,62 +321,52 @@ def stream_doc_dedup_to_parquet(
                 ).otherwise(F.lit(1)),
             )
             .filter(F.col("__rn") == 1)
-            .select(id_col)
+            .select("doc_id")
         )
         # intra-batch near keep-first: drop id_b of every verified pair
-        base, keys = _band_sides(feats, id_col)
-        intra_dropped = verified_pairs_from(base, keys, threshold).select(
-            F.col("id_b").alias(id_col)
+        base, keys = _band_sides(feats, "doc_id")
+        intra_dropped = verified_pairs_from(base, keys, THRESHOLD).select(
+            F.col("id_b").alias("doc_id")
         )
         admitted_ids = exact_first.join(
-            intra_dropped, on=id_col, how="left_anti"
+            intra_dropped, on="doc_id", how="left_anti"
         )
-        index = read_before(spark, index_path, batch_col, batch_id)
+        index = read_before(spark, index_path, "ingest_batch", batch_id)
         if index is not None:
             # cross exact: any earlier SEEN doc with the same hash
             admitted_ids = (
-                admitted_ids.join(feats.select(id_col, "__sha"), on=id_col)
+                admitted_ids.join(feats.select("doc_id", "__sha"), on="doc_id")
                 .join(
                     index.select("__sha").distinct(),
                     on="__sha",
                     how="left_anti",
                 )
-                .select(id_col)
+                .select("doc_id")
             )
             # cross near: shared predicate builder with the batch path
-            cbase, ckeys = _band_sides(index, id_col)
+            cbase, ckeys = _band_sides(index, "doc_id")
             matched = match_banded_candidates(
-                base, keys, cbase, ckeys, id_col, threshold
+                base, keys, cbase, ckeys, "doc_id", THRESHOLD
             )
             admitted_ids = admitted_ids.join(
-                matched, on=id_col, how="left_anti"
+                matched, on="doc_id", how="left_anti"
             )
-        admitted = batch_df.join(admitted_ids, on=id_col, how="left_semi")
+        admitted = batch_df.join(admitted_ids, on="doc_id", how="left_semi")
         # idempotent on replay: each batch owns its partition directory
         admitted.write.mode("overwrite").parquet(
-            f"{table}/{batch_col}={batch_id}"
+            f"{table}/ingest_batch={batch_id}"
         )
         # ALL seen features persist — rejected docs veto later dups too
         feats.write.mode("overwrite").parquet(
-            f"{index_path}/{batch_col}={batch_id}"
+            f"{index_path}/ingest_batch={batch_id}"
         )
 
     drain(stream, checkpoint, _admit)
 
 
-def doc_dedup_ingest_sql(
-    splits: tuple[int, ...] = (200, 350),
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_cols: str = "lang, n_chars",
-    num_hashes: int = 6,
-    bands: int = 3,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> str:
+def doc_dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
     """DuckDB twin of a :func:`stream_doc_dedup_to_parquet` run whose
-    micro-batches are the ``id_col`` ranges cut at ``splits``.  Because
+    micro-batches are the ``doc_id`` ranges cut at ``splits``.  Because
     keep-first-over-all-seen is associative and the batches ascend in
     id, the whole sequential run collapses to two global predicates in
     plain id order — no chained CTEs: a doc survives iff it is the
@@ -418,38 +374,30 @@ def doc_dedup_ingest_sql(
     ``id_b`` of any verified banded pair
     (:func:`llm.dedup.near_dup_banded_sql`, the same band/hash
     constants as the engine)."""
-    pairs = near_dup_banded_sql(
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        threshold=threshold,
-        table=table,
-        id_col=id_col,
-        text_col=text_col,
-    )
+    pairs = near_dup_banded_sql()
     n = len(splits)
     batch = (
         "CASE "
         + " ".join(
-            f"WHEN {id_col} < {s} THEN {i}" for i, s in enumerate(splits)
+            f"WHEN doc_id < {s} THEN {i}" for i, s in enumerate(splits)
         )
         + f" ELSE {n} END"
     )
     return f"""
 WITH __pairs AS ({pairs}),
 __ranked AS (
-  SELECT {id_col}, {batch} AS ingest_batch, {out_cols},
-         CASE WHEN {text_col} IS NULL THEN 1
-              ELSE row_number() OVER (PARTITION BY sha256({text_col})
-                                      ORDER BY {id_col})
+  SELECT doc_id, {batch} AS ingest_batch, lang, n_chars,
+         CASE WHEN text IS NULL THEN 1
+              ELSE row_number() OVER (PARTITION BY sha256(text)
+                                      ORDER BY doc_id)
          END AS __rn
-  FROM {table}
+  FROM documents
 )
-SELECT CAST(ingest_batch AS INTEGER) AS ingest_batch, {id_col}, {out_cols}
+SELECT CAST(ingest_batch AS INTEGER) AS ingest_batch, doc_id, lang, n_chars
 FROM __ranked r
 WHERE __rn = 1
-  AND NOT EXISTS (SELECT 1 FROM __pairs p WHERE p.id_b = r.{id_col})
-ORDER BY {id_col}
+  AND NOT EXISTS (SELECT 1 FROM __pairs p WHERE p.id_b = r.doc_id)
+ORDER BY doc_id
 """
 
 
@@ -457,15 +405,11 @@ def stream_line_dedup_to_parquet(
     stream: DataFrame,
     table: str,
     checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_col: str = "ingest_batch",
-    min_len: int = 20,
 ) -> None:
     """Drain ``stream`` (``availableNow``) into the parquet corpus at
     ``table``, applying corpus-wide LINE dedup incrementally
     (:func:`llm.dedup.line_dedup` with its cross-corpus
-    ``drop_hashes`` arm): per micro-batch every ≥ ``min_len``-char
+    ``drop_hashes`` arm): per micro-batch every ≥ 20-char
     line that already survives anywhere in the ACCUMULATED corpus
     drops from the new documents, duplicates within the batch keep
     their first ``(id, pos)`` copy, and the cleaned documents append
@@ -488,7 +432,7 @@ def stream_line_dedup_to_parquet(
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        prior = read_before(batch_df.sparkSession, table, batch_col, batch_id)
+        prior = read_before(batch_df.sparkSession, table, "ingest_batch", batch_id)
         if prior is not None:
             # sha2 set of every kept line of strictly earlier batches
             prior = (
@@ -497,20 +441,14 @@ def stream_line_dedup_to_parquet(
                         "__line"
                     )
                 )
-                .filter(F.length("__line") >= min_len)
+                .filter(F.length("__line") >= 20)
                 .select(F.sha2(F.col("__line"), 256).alias("__h"))
                 .distinct()
             )
-        cleaned = line_dedup(
-            batch_df,
-            text_col=text_col,
-            id_col=id_col,
-            min_len=min_len,
-            drop_hashes=prior,
-        ).withColumn(batch_col, F.lit(batch_id))
+        cleaned = line_dedup(batch_df, drop_hashes=prior).withColumn("ingest_batch", F.lit(batch_id))
         (
             cleaned.write.mode("overwrite")
-            .partitionBy(batch_col)
+            .partitionBy("ingest_batch")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(table)
         )
@@ -518,11 +456,7 @@ def stream_line_dedup_to_parquet(
     drain(stream, checkpoint, _admit)
 
 
-def line_dedup_ingest_sql(
-    splits: tuple[int, ...] = (200, 350),
-    table: str = "documents",
-    min_len: int = 20,
-) -> str:
+def line_dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
     """DuckDB twin of a :func:`stream_line_dedup_to_parquet` run whose
     micro-batches are the ``doc_id`` ranges cut at ``splits``: because
     keep-first admission is associative over ordered batches, the
@@ -537,13 +471,13 @@ def line_dedup_ingest_sql(
 WITH base AS (
   SELECT doc_id, {batch} AS ingest_batch,
          str_split(text, chr(10)) AS ls
-  FROM {table}
+  FROM documents
 ), lines AS (
   SELECT doc_id, ingest_batch, i.i - 1 AS pos, ls[i.i] AS line
   FROM base, LATERAL unnest(generate_series(1, len(ls))) AS i(i)
 ), marked AS (
   SELECT doc_id, ingest_batch, pos, line,
-         CASE WHEN length(line) >= {min_len} THEN row_number() OVER (
+         CASE WHEN length(line) >= 20 THEN row_number() OVER (
            PARTITION BY sha256(line)
            ORDER BY ingest_batch, doc_id, pos
          ) ELSE 1 END AS rn
@@ -656,7 +590,6 @@ def stream_pq_index_ingest(
     index_path: str,
     checkpoint: str,
     n_cells: int = 8,
-    m: int = 4,
     k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -691,6 +624,5 @@ def stream_pq_index_ingest(
     mean "built"."""
     return _index_ingest(
         stream, index_path, checkpoint, "codebooks", build_ivfpq_index,
-        add_to_ivfpq_index, id_col, vec_col, n_cells=n_cells, m=m,
-        k_codes=k_codes,
+        add_to_ivfpq_index, id_col, vec_col, n_cells=n_cells, k_codes=k_codes,
     )

@@ -26,40 +26,32 @@ from pyspark.sql import functions as F
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
 
 
-def stream_stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str = "user_id",
-    left_ts: str = "l_ts",
-    right_ts: str = "r_ts",
-    lookback: str = "1 hour",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Inner-join two event streams on ``by`` where the right event
-    falls within ``[left_ts - lookback, left_ts]`` — "enrich every
-    click with the purchases of the preceding hour".
+def stream_stream_interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Inner-join two event streams on ``user_id`` where the right
+    event's ``r_ts`` falls within ``[l_ts - 1 hour, l_ts]`` — "enrich
+    every click with the purchases of the preceding hour".
 
-    State bounds: both sides are watermarked, and the interval
-    condition lets Spark evict a buffered right row once the left
-    watermark passes ``right_ts + lookback`` (and vice versa).  The
+    State bounds: both sides are watermarked (1 hour), and the
+    interval condition lets Spark evict a buffered right row once the
+    left watermark passes ``r_ts + 1 hour`` (and vice versa).  The
     same body executes in batch mode, which is how the oracle checks
-    it.  Column names must already be disjoint apart from ``by``.
+    it.  Column names must already be disjoint apart from ``user_id``.
     """
     is_streaming = left.isStreaming or right.isStreaming
-    l = left.withWatermark(left_ts, watermark) if is_streaming else left
-    r = right.withWatermark(right_ts, watermark) if is_streaming else right
+    l = left.withWatermark("l_ts", "1 hour") if is_streaming else left
+    r = right.withWatermark("r_ts", "1 hour") if is_streaming else right
     cond = (
-        f"l.{by} = r.{by} AND "
-        f"{left_ts} - INTERVAL {lookback} <= {right_ts} "
-        f"AND {right_ts} <= {left_ts}"
+        "l.user_id = r.user_id AND "
+        "l_ts - INTERVAL 1 hour <= r_ts "
+        "AND r_ts <= l_ts"
     )
     return (
         l.alias("l")
         .join(r.alias("r"), F.expr(cond), "inner")
         .select(
-            F.col(f"l.{by}").alias(by),
-            *[F.col(f"l.{c}") for c in left.columns if c != by],
-            *[F.col(f"r.{c}") for c in right.columns if c != by],
+            F.col("l.user_id").alias("user_id"),
+            *[F.col(f"l.{c}") for c in left.columns if c != "user_id"],
+            *[F.col(f"r.{c}") for c in right.columns if c != "user_id"],
         )
     )
 
@@ -177,7 +169,6 @@ def stream_increment_counts_to_parquet(
     path: str,
     checkpoint: str,
     keys: list[str],
-    count_col: str = "n",
     sum_col: str | None = None,
     sum_src: str | None = None,
     partition_by: list[str] | None = None,
@@ -230,7 +221,7 @@ def stream_increment_counts_to_parquet(
         )
 
     def _agg(df: DataFrame) -> DataFrame:
-        aggs = [F.count(F.lit(1)).alias(count_col)]
+        aggs = [F.count(F.lit(1)).alias("n")]
         if sum_col is not None:
             aggs.append(F.sum(sum_src or sum_col).alias(sum_col))
         return df.groupBy(*keys).agg(*aggs)
@@ -240,7 +231,7 @@ def stream_increment_counts_to_parquet(
             current.unionByName(partial)
             .groupBy(*keys)
             .agg(
-                F.sum(count_col).alias(count_col),
+                F.sum("n").alias("n"),
                 *(
                     [F.sum(sum_col).alias(sum_col)]
                     if sum_col is not None

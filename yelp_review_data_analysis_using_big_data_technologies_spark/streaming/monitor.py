@@ -104,25 +104,21 @@ def stream_psi_monitor(
     reference: DataFrame,
     out_path: str,
     checkpoint: str,
-    value_col: str = "value",
-    buckets: int = 10,
 ) -> None:
     """Drain ``stream`` (``availableNow``) scoring each micro-batch's
-    ``value_col`` distribution against ``reference`` with
+    ``value`` distribution against ``reference`` with
     :func:`~...operators.drift.psi_profile_frozen`; per-batch profiles land
     partitioned by ``ingest_batch`` at ``out_path``.  An empty
     micro-batch scores as an all-zero ``cur_n`` column over the full
     bucket spine."""
     # ONE reference scan for the whole run: edges + per-bucket counts
     # collapse to a bounded driver-side literal every batch reuses
-    frozen = psi_freeze_reference(
-        reference, value_col=value_col, buckets=buckets
-    )
+    frozen = psi_freeze_reference(reference)
     _drain_scored(
         stream,
         out_path,
         checkpoint,
-        lambda batch: psi_profile_frozen(batch, frozen, value_col=value_col),
+        lambda batch: psi_profile_frozen(batch, frozen),
     )
 
 
@@ -131,8 +127,6 @@ def stream_ks_monitor(
     reference: DataFrame,
     out_path: str,
     checkpoint: str,
-    value_col: str = "value",
-    buckets: int = 32,
 ) -> None:
     """Drain ``stream`` (``availableNow``) scoring each micro-batch
     against ``reference`` with the EXACT two-sample KS statistic
@@ -164,9 +158,7 @@ def stream_ks_monitor(
         # distribution requirement, so each batch shuffles only its OWN
         # counts (guide §2.4 — two operations keyed the same way share
         # one exchange)
-        ref_counts = stage(
-            ks_side_counts(reference, value_col).repartition("__v")
-        )
+        ref_counts = stage(ks_side_counts(reference).repartition("__v"))
     try:
         # inside the try: a fill that fails must still release the ref
         ref_counts.count()
@@ -174,25 +166,19 @@ def stream_ks_monitor(
             stream,
             out_path,
             checkpoint,
-            lambda batch: ks_2sample(
-                ref_counts, batch, value_col=value_col, buckets=buckets
-            ),
+            lambda batch: ks_2sample(ref_counts, batch),
         )
     finally:
         release_staging(blocking=True, tag=ref_tag)
 
 
-def stream_ks_monitor_sql(
-    ref_sql: str,
-    batch_sqls: list[str],
-    value_col: str = "value",
-) -> str:
+def stream_ks_monitor_sql(ref_sql: str, batch_sqls: list[str]) -> str:
     """DuckDB twin of :func:`stream_ks_monitor` — the batch KS twin
     per micro-batch, batch-tagged and unioned (batches are
     independent given the frozen reference)."""
     return _per_batch_union(
         batch_sqls,
-        lambda bsql: ks_2sample_sql(ref_sql, bsql, value_col=value_col),
+        lambda bsql: ks_2sample_sql(ref_sql, bsql),
         "ingest_batch",
     )
 
@@ -202,7 +188,6 @@ def stream_chi2_monitor(
     reference: DataFrame,
     out_path: str,
     checkpoint: str,
-    cat_col: str = "event_type",
 ) -> None:
     """Drain ``stream`` (``availableNow``) scoring each micro-batch's
     CATEGORY MIX against ``reference`` with Pearson χ²
@@ -214,35 +199,26 @@ def stream_chi2_monitor(
     profiles land partitioned by ``ingest_batch`` (replay-safe
     dynamic overwrite).  Empty micro-batches are scored too (all-zero
     cur_n over the reference's categories)."""
-    frozen = chi2_freeze_reference(reference, cat_col=cat_col)
+    frozen = chi2_freeze_reference(reference)
     _drain_scored(
         stream,
         out_path,
         checkpoint,
-        lambda batch: chi2_drift_frozen(batch, frozen, cat_col=cat_col),
+        lambda batch: chi2_drift_frozen(batch, frozen),
     )
 
 
-def stream_chi2_monitor_sql(
-    ref_sql: str,
-    batch_sqls: list[str],
-    cat_col: str = "event_type",
-) -> str:
+def stream_chi2_monitor_sql(ref_sql: str, batch_sqls: list[str]) -> str:
     """DuckDB twin of :func:`stream_chi2_monitor` — the batch χ² twin
     per micro-batch, batch-tagged and unioned."""
     return _per_batch_union(
         batch_sqls,
-        lambda bsql: chi2_drift_sql(ref_sql, bsql, cat_col=cat_col),
+        lambda bsql: chi2_drift_sql(ref_sql, bsql),
         "ingest_batch, category",
     )
 
 
-def stream_psi_monitor_sql(
-    ref_sql: str,
-    batch_sqls: list[str],
-    value_col: str = "value",
-    buckets: int = 10,
-) -> str:
+def stream_psi_monitor_sql(ref_sql: str, batch_sqls: list[str]) -> str:
     """DuckDB twin of :func:`stream_psi_monitor` — the batch PSI twin
     per micro-batch, batch-tagged and unioned (each micro-batch's
     profile is independent given the frozen reference, so the
@@ -250,8 +226,6 @@ def stream_psi_monitor_sql(
     construction)."""
     return _per_batch_union(
         batch_sqls,
-        lambda bsql: psi_profile_sql(
-            ref_sql, bsql, value_col=value_col, buckets=buckets
-        ),
+        lambda bsql: psi_profile_sql(ref_sql, bsql),
         "ingest_batch, bucket",
     )

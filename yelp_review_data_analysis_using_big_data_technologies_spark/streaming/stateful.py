@@ -6,21 +6,19 @@ The example operator is a per-user running profile: cumulative event
 count, running value sum, and the timestamp of the last seen event,
 emitted once per micro-batch per active user.  State lives in the
 streaming state store partitioned by the grouping key — exactly the
-layout a 1000-executor cluster shards — and a processing-time timeout
-evicts idle users so state stays bounded.
+layout a 1000-executor cluster shards.  State is never evicted: the
+operator runs without a state timeout (below).
 
 The handler receives Arrow-batched pandas frames (all rows of one key
 in one micro-batch), not single rows: per-batch Python overhead, the
 same batching contract as ``mapInPandas``.
 
-Idle-state eviction is OPT-IN (``idle_timeout_ms``): with
-``ProcessingTimeTimeout`` enabled Spark keeps scheduling no-data
-micro-batches to fire pending timers, so an ``availableNow``
-(run-to-completion) execution never terminates — measured: ~100
-empty batches in 90 s after the data batch finished.  Leave the
-timeout off for batch-replay/backfill runs; turn it on for
-continuous streams where bounded state matters more than a finite
-run.
+No idle-state eviction: with ``ProcessingTimeTimeout`` Spark keeps
+scheduling no-data micro-batches to fire pending timers, so an
+``availableNow`` (run-to-completion) execution never terminates —
+measured: ~100 empty batches in 90 s after the data batch finished.
+A continuous stream that must bound state would need the timeout
+back (``state.setTimeoutDuration`` plus a ``hasTimedOut`` branch).
 """
 
 from __future__ import annotations
@@ -98,49 +96,29 @@ def _emit_profile(key: tuple, n: int, s: float, last_us: int) -> pd.DataFrame:
     )
 
 
-def _make_update_profile(idle_timeout_ms: int | None):
-    """Build the state-update handler; closing over the timeout keeps
-    the handler itself pickle-able for the Python workers."""
-
-    def _update_profile(
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        carry = state.get if state.exists else (0, None, None)
-        n, s, last_us = _fold_profile(carry, batches)
-        state.update((n, None if s is None else round(s, 6), last_us))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield _emit_profile(key, n, s, last_us)
-
-    return _update_profile
+def _update_profile(
+    key: tuple[Any, ...],
+    batches: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """The state-update handler: fold this micro-batch into the
+    carried ``(n, sum, last_us)`` and emit the user's profile."""
+    carry = state.get if state.exists else (0, None, None)
+    n, s, last_us = _fold_profile(carry, batches)
+    state.update((n, None if s is None else round(s, 6), last_us))
+    yield _emit_profile(key, n, s, last_us)
 
 
-def running_user_profile(
-    events: DataFrame,
-    idle_timeout_ms: int | None = None,
-) -> DataFrame:
+def running_user_profile(events: DataFrame) -> DataFrame:
     """Apply the stateful per-user profile over a STREAMING events
-    frame (``user_id, ts: timestamp, value: double``).
-
-    ``idle_timeout_ms=None`` (default) uses ``NoTimeout`` so
-    run-to-completion (``availableNow``) executions terminate; pass a
-    duration (e.g. ``3_600_000``) on continuous streams to evict
-    users idle longer than that and bound state-store size.
+    frame (``user_id, ts: timestamp, value: double``), with
+    ``NoTimeout`` so run-to-completion (``availableNow``) executions
+    terminate.
     """
-    timeout = (
-        GroupStateTimeout.NoTimeout
-        if idle_timeout_ms is None
-        else GroupStateTimeout.ProcessingTimeTimeout
-    )
     return events.groupBy("user_id").applyInPandasWithState(
-        _make_update_profile(idle_timeout_ms),
+        _update_profile,
         outputStructType=RUNNING_PROFILE_SCHEMA,
         stateStructType=RUNNING_PROFILE_STATE,
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

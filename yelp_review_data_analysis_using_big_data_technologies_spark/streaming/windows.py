@@ -81,12 +81,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Tumbling-window event counts + value sums per event type.
+def tumbling_counts(events: DataFrame, watermark: str | None = None) -> DataFrame:
+    """Tumbling 1-hour-window event counts + value sums per event type.
 
     Works identically on a batch or streaming ``events`` frame.  Pass
     ``watermark`` (e.g. ``"30 minutes"``) on streams that must bound
@@ -95,26 +91,23 @@ def tumbling_counts(
     """
     # A tumbling window IS a sliding window whose slide equals its
     # width (F.window(ts, w) == F.window(ts, w, w)) — one shared body.
-    return sliding_counts(
-        events, window=window, slide=window, watermark=watermark
-    )
+    return sliding_counts(events, slide="1 hour", watermark=watermark)
 
 
 def sliding_counts(
     events: DataFrame,
-    window: str = "1 hour",
     slide: str = "30 minutes",
     watermark: str | None = None,
 ) -> DataFrame:
-    """Sliding-window event counts + value sums per event type: each
-    event contributes to ``window/slide`` overlapping windows (Spark
+    """Sliding 1-hour-window event counts + value sums per event type:
+    each event contributes to ``1 hour / slide`` overlapping windows (Spark
     materializes the replication inside the WindowExec, not as an
     explode).  Same batch/streaming duality as :func:`tumbling_counts`;
     state keys grow by the overlap factor, so watermarking matters
     more here than for tumbling windows."""
     src = events.withWatermark("ts", watermark) if watermark else events
     return (
-        src.groupBy(F.window("ts", window, slide).alias("w"), "event_type")
+        src.groupBy(F.window("ts", "1 hour", slide).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -128,32 +121,20 @@ def sliding_counts(
     )
 
 
-def sliding_counts_sql(
-    window_s: int = 3600, slide_s: int = 1800, table: str = "events"
-) -> str:
-    """DuckDB twin of :func:`sliding_counts`, GENERATED from the same
-    dials (seconds) so a window/slide change cannot silently break
-    oracle equality against a constant pinned to 1h/30m.  NULL-ts
-    rows are excluded to mirror Spark's event-time contract
-    (``F.window``/``session_window`` drop rows with no event time).  Each event
-    lands in ``window_s / slide_s`` windows on the slide grid — its
-    own slot and the ``k-1`` preceding ones — replicated with unnest.
-    ``window_s`` must be a multiple of ``slide_s`` (Spark's window
-    replication follows the same grid)."""
-    if window_s % slide_s != 0:
-        raise ValueError(
-            f"window ({window_s}s) must be a multiple of slide ({slide_s}s)"
-        )
-    k = window_s // slide_s
-    offsets = ", ".join(
-        f"slot - INTERVAL {i * slide_s} SECOND" for i in range(k)
-    )
+def sliding_counts_sql() -> str:
+    """DuckDB twin of :func:`sliding_counts` (1-hour windows) at its
+    default 30-minute slide.  NULL-ts rows are excluded to mirror
+    Spark's event-time contract (``F.window``/``session_window`` drop
+    rows with no event time).  Each event lands in the 2 windows on
+    the 30-minute slide grid that cover it — its own slot and the
+    preceding one — replicated with unnest."""
+    offsets = ", ".join(f"slot - INTERVAL {i * 1800} SECOND" for i in range(2))
     return f"""
 WITH slotted AS (
-  SELECT make_timestamp(CAST(floor(epoch(ts) / {slide_s}) AS BIGINT)
-                        * {slide_s} * 1000000) AS slot,
+  SELECT make_timestamp(CAST(floor(epoch(ts) / 1800) AS BIGINT)
+                        * 1800 * 1000000) AS slot,
          event_type, value
-  FROM {table} WHERE ts IS NOT NULL
+  FROM events WHERE ts IS NOT NULL
 ), w AS (
   SELECT unnest([{offsets}]) AS window_start,
          event_type, value
@@ -165,17 +146,8 @@ FROM w GROUP BY 1, 2
 """
 
 
-#: Legacy pinned twin (window=1h, slide=30m) — kept for existing
-#: importers; new oracles should call :func:`sliding_counts_sql`.
-SLIDING_COUNTS_SQL = sliding_counts_sql()
-
-
-def tumbling_ohlc(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str | None = None,
-) -> DataFrame:
-    """Streaming OHLC bars: the batch resampling primitive
+def tumbling_ohlc(events: DataFrame) -> DataFrame:
+    """Streaming 1-hour OHLC bars: the batch resampling primitive
     (operators/ohlc.py) under Structured-Streaming state — open and
     close ride the same deterministic ``min(struct)``/``max(struct)``
     selection, which is ORDER-AGNOSTIC and therefore safe under
@@ -184,9 +156,8 @@ def tumbling_ohlc(
     struct pair plus the scalar aggregates — O(1) per bar, the same
     footprint as a count.
 
-    Batch/streaming duality as :func:`tumbling_counts`; pass
-    ``watermark`` for append-mode emission, leave ``None`` for
-    complete-mode/batch.  Rows with NULL, NaN, or ±Inf value are
+    Batch/streaming duality as :func:`tumbling_counts`, without a
+    watermark (complete-mode/batch).  Rows with NULL, NaN, or ±Inf value are
     dropped — the SAME guard as the batch ``ohlc_bars``
     (operators/ohlc.py), so the streaming form never diverges from
     its batch twin when a non-finite tick arrives (a NaN would poison
@@ -197,10 +168,9 @@ def tumbling_ohlc(
     """
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.ohlc import _NULL_ID_SENTINEL
 
-    src = events.withWatermark("ts", watermark) if watermark else events
     v = F.col("value")
     finite = v.isNotNull() & ~F.isnan(v) & (F.abs(v) != F.lit(float("inf")))
-    staged = src.where(finite).select(
+    staged = events.where(finite).select(
         F.col("ts"),
         F.col("event_type"),
         F.coalesce(F.col("event_id"), F.lit(_NULL_ID_SENTINEL)).alias(
@@ -210,7 +180,7 @@ def tumbling_ohlc(
     )
     sel = F.struct("ts", "__id", "__v")
     return (
-        staged.groupBy(F.window("ts", window).alias("w"), "event_type")
+        staged.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.min(sel).getField("__v").alias("open"),
             F.max("__v").alias("high"),
@@ -232,7 +202,7 @@ def tumbling_ohlc(
     )
 
 
-def tumbling_ohlc_sql(window_s: int = 3600, table: str = "events") -> str:
+def tumbling_ohlc_sql(table: str = "events") -> str:
     """DuckDB twin of :func:`tumbling_ohlc` — same epoch-floor window
     grid as :func:`sliding_counts_sql`, same row_number argmin/argmax
     formulation as the batch OHLC twin."""
@@ -240,8 +210,8 @@ def tumbling_ohlc_sql(window_s: int = 3600, table: str = "events") -> str:
 
     return f"""
 WITH e AS (
-  SELECT make_timestamp(CAST(floor(epoch(ts) / {window_s}) AS BIGINT)
-                        * {window_s} * 1000000) AS window_start,
+  SELECT make_timestamp(CAST(floor(epoch(ts) / 3600) AS BIGINT)
+                        * 3600 * 1000000) AS window_start,
          event_type, ts,
          COALESCE(event_id, {_NULL_ID_SENTINEL}) AS __id,
          value AS __v
@@ -269,7 +239,6 @@ FROM r GROUP BY 1, 2
 def sessionize(
     events: DataFrame,
     gap: str = "30 minutes",
-    user_col: str = "user_id",
     watermark: str | None = None,
 ) -> DataFrame:
     """Gap-based sessionization via Spark's native ``session_window``:
@@ -288,14 +257,14 @@ def sessionize(
     """
     src = events.withWatermark("ts", watermark) if watermark else events
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), user_col)
+        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
             F.max("ts").alias("last_ts"),
         )
         .select(
-            user_col,
+            "user_id",
             F.col("w.start").alias("session_start"),
             "last_ts",
             "n_events",
@@ -307,9 +276,9 @@ def sessionize(
 #: DuckDB twin of :func:`sessionize` — the lag/cumulative-sum
 #: formulation of the same gap rule (new session iff diff is STRICTLY
 #: greater than the gap, matching session_window's boundary merge).
-def sessionize_sql(gap_s: int = 1800, table: str = "events") -> str:
-    """DuckDB twin of :func:`sessionize`, GENERATED from the same gap
-    (seconds) — same break rule (strictly-greater gap starts a new
+def sessionize_sql() -> str:
+    """DuckDB twin of :func:`sessionize` at its default 30-minute gap
+    — same break rule (strictly-greater gap starts a new
     session) as the Spark gaps-and-islands build.  NULL-ts rows are
     excluded (Spark ``session_window`` drops them; a NULL user_id
     still forms its own session partition in both engines).
@@ -319,13 +288,13 @@ def sessionize_sql(gap_s: int = 1800, table: str = "events") -> str:
     The running ``sum`` therefore uses the default RANGE frame, which
     adds a whole peer group at once, so tied events always share one
     session (as they do in ``session_window``)."""
-    return f"""
+    return """
 WITH o AS (
   SELECT user_id, ts, value,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR ts - lag(ts) OVER w > INTERVAL {gap_s} SECOND
+                OR ts - lag(ts) OVER w > INTERVAL 1800 SECOND
               THEN 1 ELSE 0 END AS brk
-  FROM {table} WHERE ts IS NOT NULL
+  FROM events WHERE ts IS NOT NULL
   WINDOW w AS (PARTITION BY user_id ORDER BY ts)
 ), s AS (
   SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts) AS sid
@@ -335,11 +304,6 @@ SELECT user_id, min(ts) AS session_start, max(ts) AS last_ts,
        count(*) AS n_events, round(sum(value), 2) + 0 AS sum_value
 FROM s GROUP BY user_id, sid
 """
-
-
-#: Legacy pinned twin (gap=30m) — kept for existing importers; new
-#: oracles should call :func:`sessionize_sql`.
-SESSIONIZE_SQL = sessionize_sql()
 
 
 def drain(
