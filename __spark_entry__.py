@@ -2730,7 +2730,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "events_psi_drift": _q_events_psi_drift,
     "vec_ann_recall_profile": llm_queries.vec_ann_recall_profile,
     "doc_bm25_prf_topk": llm_queries.doc_bm25_prf_topk,
-    "vec_mmr_rerank_batch": llm_queries.vec_mmr_rerank_batch,
     "join_inner_chain": _q_join_inner_chain,
     "events_heavy_hitters": _q_events_heavy_hitters,
     "json_variant_extract": _q_variant_extract,
@@ -2838,8 +2837,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "orc_ingest_roundtrip": _q_orc_ingest_roundtrip,
     "join_bloom_pruned": _q_join_bloom_pruned,
     "doc_dup_spans": llm_queries.doc_dup_spans,
-    "doc_ngram_jaccard_prefix": llm_queries.doc_ngram_jaccard_prefix,
-    "doc_ngram_jaccard_auto": llm_queries.doc_ngram_jaccard_auto,
     "doc_cross_corpus_jaccard": llm_queries.doc_cross_corpus_jaccard,
     "doc_graph_triangles": llm_queries.doc_graph_triangles,
     "events_changepoint_profile": _q_events_changepoint,

@@ -148,10 +148,8 @@ HEADLINE = (
     "events_equidepth_histogram",
     "corpus_keep_central",
     # round-10 additions: the global keep-first streaming doc dedup
-    # prices three foreachBatch rounds of feature build + index join;
-    # the Jaccard regime dispatcher prices profile + chosen plan
+    # prices three foreachBatch rounds of feature build + index join
     "stream_doc_dedup_ingest",
-    "doc_ngram_jaccard_auto",
     # the R-S cross-corpus join, the triangle diagnostic over the
     # near-dup graph, and the hourly CUSUM changepoint
     "doc_cross_corpus_jaccard",
@@ -182,7 +180,7 @@ HEADLINE = (
     # 2-core density filter over the near-dup graph
     "doc_graph_kcore",
     # round-11 additions: the end-to-end serving composition (index
-    # build + pruned search + BM25 + RRF + greedy MMR rounds) and the
+    # build + pruned search + BM25 + RRF + grouped-map MMR) and the
     # streaming KS monitor (3 foreachBatch exact-KS scoring rounds)
     "retrieval_serving_pipeline",
     "stream_ks_monitor",
@@ -194,11 +192,9 @@ HEADLINE = (
     # pseudo-relevance feedback: two BM25 passes + the expansion agg
     "doc_bm25_prf_topk",
     # round-12 additions: filtered ANN over the persisted pruned index
-    # (prices the probe-widening rungs), the grouped-map MMR dispatch,
-    # the persisted IVF-PQ build+search, and the PQ recall curve
-    # (bruteforce + 4 ADC legs)
+    # (prices the probe-widening rungs) and the persisted IVF-PQ
+    # build+search
     "vec_filtered_ann",
-    "vec_mmr_rerank_batch",
     "vec_ivfpq_index_search",
     # streaming IVF-index maintenance: build wave + two frozen-seed
     # delta merges + the post-ingest pruned search
@@ -241,17 +237,12 @@ HEADLINE = (
 #: keys and was 14% of the sf0.1 headline wall time).  They still run
 #: and report, but at the SMALL scale factor, outside the headline
 #: total, so the headline reflects paths a deployment would run.
-#: r14 demotions (r12 #4 / r13 #6 verdict queues):
-#: - doc_ngram_jaccard_prefix: the bench corpus at t=0.3 keeps ~70%
-#:   of shingles — the documented regime where prefix filtering
-#:   CANNOT pay (6.7 s of pure diagnostic cost); the auto dispatcher
-#:   entry stays in the headline and proves the regime choice.
-#: - vec_ann_recall_profile_pq: a rows-only 4-leg recall-curve
-#:   diagnostic (12-25 s) — a tuning exhibit, not a serving path;
-#:   the PQ serving path itself stays via vec_ivfpq_index_search.
+#: r14 demotion (r12 #4 / r13 #6 verdict queues):
+#: vec_ann_recall_profile_pq is a rows-only 4-leg recall-curve
+#: diagnostic (12-25 s) — a tuning exhibit, not a serving path; the
+#: PQ serving path itself stays via vec_ivfpq_index_search.
 SMALL_TIER = (
     "doc_near_dup_minhash_ml",
-    "doc_ngram_jaccard_prefix",
     "vec_ann_recall_profile_pq",
 )
 

@@ -54,9 +54,6 @@ SKIP = {
     "stream_psi_monitor",
     "stream_ks_monitor",
     "stream_chi2_monitor",
-    # r10: runs the greedy selection rounds (bounded collects) on
-    # invocation; the returned frame is a literal relation
-    "vec_mmr_rerank",
     # r10: runs 7 eager localCheckpoint rounds on invocation (the
     # anti-plan-blow-up lineage cuts); returned frame reads them
     "doc_graph_kcore",

@@ -70,7 +70,8 @@ ENTRIES = [
     # capped distinct-relation self-join
     "events_trend_regression",
     "events_cooccurrence_lift",
-    # greedy MMR rounds must pick identical sequences under any layout
+    # the grouped-map MMR greedy (per-group pandas arithmetic) must
+    # pick identical sequences under any layout
     "vec_mmr_rerank",
     # TakeOrderedAndProject top-v + bounded windows
     "doc_vocab_coverage",
@@ -79,11 +80,9 @@ ENTRIES = [
     # fixed-iteration k-core peel (checkpointed rounds)
     "doc_graph_kcore",
     # r12 shapes: the probe-widening ladder (per-query eff-probe
-    # derivation must not move with layout), the Arrow grouped-map
-    # MMR dispatch (per-group pandas arithmetic), and the R-S
-    # banded-LSH delta dedup (anti-join admission)
+    # derivation must not move with layout) and the R-S banded-LSH
+    # delta dedup (anti-join admission)
     "vec_filtered_ann",
-    "vec_mmr_rerank_batch",
     "vec_dedup_delta",
     # r13 shapes: catalog-resolved serving (external tables + managed
     # partitioned dim + persistent view) — resolution and the CBO

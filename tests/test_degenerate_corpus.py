@@ -68,7 +68,6 @@ ENTRIES = [
     "doc_normalized_dedup",
     "doc_near_dup_banded",
     "doc_ngram_jaccard",
-    "doc_ngram_jaccard_prefix",
     "doc_simhash_near_dup",
     "doc_dup_spans",
     "doc_dup_span_removal",
@@ -83,7 +82,6 @@ ENTRIES = [
     "doc_pagerank_weighted",
     "doc_graph_triangles",
     "doc_graph_communities",
-    "doc_ngram_jaccard_auto",
     "corpus_shuffle_order",
     "corpus_keep_central",
     "corpus_keep_best",

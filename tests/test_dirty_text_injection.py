@@ -85,19 +85,14 @@ ENTRIES = [
     "doc_winnow_pairs",
     "doc_tfidf_cosine_pairs",
     # r9 second half: duplicate-span detection (empty/whitespace/emoji
-    # docs through positional shingles + islands merge) and the
-    # prefix-filtered Jaccard (prefix selection over dirty shingles
-    # must stay identical to the full posting join's result)
+    # docs through positional shingles + islands merge)
     "doc_dup_spans",
-    "doc_ngram_jaccard_prefix",
     "doc_dup_span_removal",
     "doc_pagerank",
     "corpus_keep_central",
-    # r10 newcomers: the regime dispatcher must pick identically off
-    # dirty shingle stats in both plans; the R-S join, LPA majority
-    # vote, weighted rank, triangle close, and the seeded shuffle all
-    # run over the dirty corpus too
-    "doc_ngram_jaccard_auto",
+    # r10 newcomers: the R-S join, LPA majority vote, weighted rank,
+    # triangle close, and the seeded shuffle all run over the dirty
+    # corpus too
     "doc_cross_corpus_jaccard",
     "doc_graph_communities",
     "doc_graph_triangles",

@@ -249,12 +249,12 @@ def test_dup_spans_empty(empty_docs):
     _expect_empty(dup_spans(empty_docs))
 
 
-def test_prefix_jaccard_empty(empty_docs):
+def test_ngram_jaccard_empty(empty_docs):
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
-        ngram_jaccard_pairs_prefix,
+        ngram_jaccard_pairs,
     )
 
-    _expect_empty(ngram_jaccard_pairs_prefix(empty_docs))
+    _expect_empty(ngram_jaccard_pairs(empty_docs))
 
 
 def test_bloom_join_empty_fact(spark, smoke_dir):

@@ -291,10 +291,7 @@ def test_ivf_filtered_twin_sql_single_rung_is_valid(spark):
     )
 
     sql = _ivf_filtered_sql(
-        "label = 3 AND vec_id % 7 = 0",
-        k=5,
-        cells=8,
-        n_probe=8,  # >= n_cells -> ladder == [8]
+        n_probe=8,  # >= n_cells (8) -> ladder == [8]
         qpred="vec_id < 5",
     )
     assert "CASE  ELSE" not in sql and "CASE ELSE" not in sql

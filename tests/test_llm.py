@@ -95,7 +95,9 @@ class TestSimhash:
     def test_equal_for_identical_tokens(self, docs):
         vals = {
             r.doc_id: r.sh
-            for r in docs.select("doc_id", ldd.simhash("text").alias("sh")).collect()
+            for r in docs.select(
+                "doc_id", ldd.simhash_words("text")[0].alias("sh")
+            ).collect()
         }
         assert vals[1] == vals[2]
         assert vals[1] != vals[4]
@@ -768,6 +770,27 @@ class TestNgramJaccard:
         assert none == []
         some = ldd.ngram_jaccard_pairs(docs, threshold=0.2, max_df=None).collect()
         assert len(some) > 0
+
+
+    def test_exact_dup_found_and_short_docs_absent(self, spark):
+        docs = spark.createDataFrame(
+            [
+                ("a", "x y z p q r"),
+                ("b", "x y z p q r"),  # exact dup of a
+                ("c", "x y z p q r s"),  # superset
+                ("tiny", "x y"),  # below shingle width
+                ("empty", ""),
+                ("nulltext", None),
+            ],
+            "doc_id string, text string",
+        )
+        out = sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in ldd.ngram_jaccard_pairs(docs, threshold=1.0).collect()
+        )
+        # only the exact pair reaches J = 1.0; docs with fewer than
+        # three tokens (or no text) have no shingles and never pair
+        assert out == [("a", "b", 1.0)]
 
 
 class TestFrameSampling:

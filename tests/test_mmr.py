@@ -96,8 +96,8 @@ def test_mmr_validation(spark):
 def test_mmr_candidates_generic_id_types(spark):
     """mmr_rerank_candidates is generic over id types (r10 advice):
     STRING doc ids and a string query id must round-trip losslessly
-    through the literal picks relation — the old hardcoded-bigint
-    schema made createDataFrame fail here."""
+    through the grouped map's output schema — a hardcoded-bigint
+    schema fails here."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import mmr_rerank_candidates
 
     emb = spark.createDataFrame(
@@ -134,15 +134,15 @@ def test_mmr_candidates_respects_external_relevance_order(spark):
 
 def test_mmr_candidates_duplicate_rows_keep_max_rel(spark):
     """Duplicate (query_id, id) candidate rows resolve to the MAX rel
-    deterministically (r11 advice): dict-of-collected-rows kept the
-    LAST rel in collect order, so a duplicated candidate's score — and
-    therefore the greedy pick order — depended on partition layout."""
+    deterministically (r11 advice): last-row-wins would make a
+    duplicated candidate's score — and therefore the greedy pick
+    order — depend on partition layout."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import mmr_rerank_candidates
 
     emb = _emb(spark, [(1, [1.0, 0.0]), (2, [0.0, 1.0])])
     # vec 2 appears twice: once losing to vec 1 (0.1), once winning
     # (0.9).  Max-rel resolution must rank vec 2 first with rel 0.9;
-    # last-row-wins would flip the order depending on collect order.
+    # last-row-wins would flip the order depending on row order.
     cand = spark.createDataFrame(
         [(0, 2, 0.1), (0, 1, 0.5), (0, 2, 0.9)],
         "query_id long, vec_id long, rel double",
@@ -151,11 +151,11 @@ def test_mmr_candidates_duplicate_rows_keep_max_rel(spark):
     assert [(r.vec_id, r.rel) for r in rows] == [(2, 0.9), (1, 0.5)]
 
 
-def test_mmr_distributed_equals_driver_path(spark):
-    """The Arrow-batched grouped-map dispatch (r12) must be
-    bit-identical to the driver greedy on the same pool — same
-    _mmr_greedy_pool arithmetic, same tie-breaks — including with
-    duplicate candidates and string ids."""
+def test_mmr_string_ids_with_duplicate_candidate(spark):
+    """Two queries over string ids, one candidate listed twice: the
+    grouped greedy resolves the duplicate to its max rel and picks the
+    pinned sequence per query (same _mmr_greedy_pool arithmetic and
+    tie-breaks as the DuckDB twin)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import mmr_rerank_candidates
 
     emb = spark.createDataFrame(
@@ -179,26 +179,26 @@ def test_mmr_distributed_equals_driver_path(spark):
         ],
         "query_id string, vec_id string, rel double",
     )
-    drv = [
+    rows = [
         tuple(r)
-        for r in mmr_rerank_candidates(
-            cand, emb, k=3, lam=0.4, distributed=False
-        ).orderBy("query_id", "rk").collect()
+        for r in mmr_rerank_candidates(cand, emb, k=3, lam=0.4)
+        .orderBy("query_id", "rk")
+        .collect()
     ]
-    dst = [
-        tuple(r)
-        for r in mmr_rerank_candidates(
-            cand, emb, k=3, lam=0.4, distributed=True
-        ).orderBy("query_id", "rk").collect()
+    assert rows == [
+        ("q1", "a", 0.9, 0.9, 1),
+        ("q1", "c", 0.7, -0.144264, 2),
+        ("q1", "b", 0.89, -0.240999, 3),
+        ("q2", "d", 0.8, 0.8, 1),
+        ("q2", "a", 0.75, 0.3, 2),
+        ("q2", "b", 0.6, -0.356999, 3),
     ]
-    assert drv == dst
-    assert len(drv) == 6
 
 
-def test_mmr_auto_dispatch_threshold(spark):
-    """distributed=None auto-dispatches on distinct query count: both
-    regimes produce identical results for a long-id pool (large int64
-    ids must survive the grouped-map — the NULL-marker design point)."""
+def test_mmr_large_int64_ids_survive(spark):
+    """Large int64 ids must survive the grouped map (the rel rows ride
+    under a boolean marker, not a NULL id that would force pandas to
+    float64)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import mmr_rerank_candidates
 
     big = 2**55  # would corrupt under a float64 round-trip
@@ -210,17 +210,10 @@ def test_mmr_auto_dispatch_threshold(spark):
         [(0, big, 0.9), (0, big + 1, 0.8), (0, big + 2, 0.7)],
         "query_id long, vec_id long, rel double",
     )
-    auto = [
+    rows = [
         tuple(r)
-        for r in mmr_rerank_candidates(
-            cand, emb, k=2, lam=0.5, distributed_min_queries=1
-        ).orderBy("rk").collect()  # auto -> distributed (1 >= 1)
+        for r in mmr_rerank_candidates(cand, emb, k=2, lam=0.5)
+        .orderBy("rk")
+        .collect()
     ]
-    drv = [
-        tuple(r)
-        for r in mmr_rerank_candidates(
-            cand, emb, k=2, lam=0.5, distributed=False
-        ).orderBy("rk").collect()
-    ]
-    assert auto == drv
-    assert all(r[1] >= big for r in auto)  # ids intact
+    assert rows == [(0, big, 0.9, 0.9, 1), (0, big + 2, 0.7, -0.078747, 2)]

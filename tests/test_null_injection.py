@@ -100,10 +100,9 @@ ENTRIES = [
     "doc_simhash_near_dup",
     "doc_ngram_jaccard",
     # r10: NULL ids through the seeded shuffle (dropped, the pack_bins
-    # contract), NULL texts through the R-S join and the dispatcher
+    # contract), NULL texts through the R-S join
     "corpus_shuffle_order",
     "doc_cross_corpus_jaccard",
-    "doc_ngram_jaccard_auto",
     "doc_bm25_topk",
     "multimodal_integrity_audit",
     "corpus_clean_pipeline",
@@ -238,11 +237,9 @@ ENTRIES = [
     # tenth wave (r9 second half): bloom-pruned join under NULL join
     # keys both sides (the no-false-negatives contract must hold with
     # the NULL-culling filter in the prune), duplicate-span detection
-    # under NULL ids/texts, and the prefix-filtered Jaccard twin
-    # (prefix selection under NULL text must match the full join)
+    # under NULL ids/texts
     "join_bloom_pruned",
     "doc_dup_spans",
-    "doc_ngram_jaccard_prefix",
     "doc_dup_span_removal",
     "bucketed_join_roundtrip",
     "doc_pagerank",

@@ -19,7 +19,14 @@ Keywords a call passes into a function's ``**kwargs`` (a test helper's
 These rules can only hide an unset parameter.
 
 ``ALLOWED`` names the parameters kept settable anyway; each carries
-the reason."""
+the reason.
+
+A second scan covers what the first cannot see: a required parameter
+of a private (``_``-prefixed) module-level helper to which every call
+passes the same literal or module constant (a constant and the literal
+it is assigned count as one value).  Calls reach a private helper only
+from its own module or through an import of that module; a helper the
+repo passes as a value is skipped."""
 
 import ast
 import builtins
@@ -72,15 +79,50 @@ def _literal(node):
     return type(value), value
 
 
+def _constants(trees):
+    """Key function for the values calls pass: a literal, or a module
+    constant (an upper-case name some file assigns at module level),
+    maps to one key — a constant whose every assignment is the same
+    literal shares that literal's key; anything else maps to ``None``."""
+    assigned = {}
+    for tree in trees:
+        for node in tree.body:
+            targets = node.targets if isinstance(node, ast.Assign) else [getattr(node, "target", None)]
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id.upper() == t.id and t.id.strip("_"):
+                    lit = _literal(node.value) if node.value is not None else None
+                    assigned.setdefault(t.id, set()).add(repr(lit) if lit else t.id)
+
+    def key(node):
+        if node is None:
+            return None
+        lit = _literal(node)
+        if lit is not None:
+            return repr(lit)
+        name = node.id if isinstance(node, ast.Name) else getattr(node, "attr", None)
+        if name in assigned:
+            values = assigned[name]
+            return next(iter(values)) if len(values) == 1 else name
+        return None
+
+    return key
+
+
 class _Function:
     def __init__(self, path, node):
         self.key, self.node = f"{path}::{node.name}", node
+        self.path, self.module = path, path[:-3].replace(os.sep, ".")
         a = node.args
         self.positional = [p.arg for p in a.posonlyargs + a.args]
         pos_defaults = dict(zip(self.positional[len(self.positional) - len(a.defaults):], a.defaults))
         kw_defaults = {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
         self.defaults = {**pos_defaults, **kw_defaults}
         self.set = set()
+        self.required = [p for p in self.positional + [p.arg for p in a.kwonlyargs] if p not in self.defaults]
+        #: required param → the key of each value a call passes
+        #: (``None``: a value that is not a constant, or unknown)
+        self.values = {p: set() for p in self.required}
+        self.calls = 0
 
     def passes(self, param, value):
         """Record that a call passes ``value`` (``None``: an unknown
@@ -96,7 +138,12 @@ class _Function:
                 return
         self.set.add(param)
 
-    def call(self, args, keywords):
+    def call(self, args, keywords, key=None):
+        """Record a call.  ``key`` (see :func:`_constants`) records the
+        values it passes to required parameters; ``None``: the call
+        may target a same-named function of another module, so it
+        sets options but leaves those values alone."""
+        given = {}
         for i, arg in enumerate(args):
             if isinstance(arg, ast.Starred):
                 for p in self.positional[i:]:
@@ -104,12 +151,18 @@ class _Function:
                 break
             if i < len(self.positional):
                 self.passes(self.positional[i], arg)
+                given[self.positional[i]] = arg
         for kw in keywords:
             if kw.arg is None:
                 for p in self.defaults:
                     self.passes(p, None)
             else:
                 self.passes(kw.arg, kw.value)
+                given[kw.arg] = kw.value
+        if key is not None:
+            self.calls += 1
+            for p in self.required:
+                self.values[p].add(key(given.get(p)))
 
 
 def _is_package_module(module, level):
@@ -120,15 +173,19 @@ class _File:
     """Call-target resolution within one file: import aliases,
     ``functools.partial`` and the file's own definitions."""
 
-    def __init__(self, tree, funcs):
+    def __init__(self, path, tree, funcs):
         self.tree, self.funcs = tree, funcs
+        package = path[:-3].split(os.sep)[:-1]
         self.aliases, self.external, self.partials = {}, set(), set()
+        self.origin = {}  # local name → dotted module it was imported from
         for node in ast.walk(tree):
             if isinstance(node, ast.ImportFrom):
                 for a in node.names:
                     local = a.asname or a.name
                     if _is_package_module(node.module, node.level):
                         self.aliases[local] = a.name
+                        base = package[: len(package) - node.level + 1] if node.level else []
+                        self.origin[local] = ".".join(base + ([node.module] if node.module else []))
                     elif node.module == "functools" and a.name == "partial":
                         self.partials.add(local)
                     else:
@@ -154,12 +211,33 @@ class _File:
             return func.attr
         return None
 
+    def reaches(self, path, func, f):
+        """Whether a call of ``func`` in this file (``path``) is a call
+        of package function ``f`` for the required-parameter scan: a
+        private function is reached from its own module or through an
+        import of its module, a public one by name."""
+        if not f.node.name.startswith("_"):
+            return True
+        module = self._module_of(func)
+        return module == f.module or (module is None and f.path == path)
+
+    def _module_of(self, func):
+        """Dotted module a call target was imported from, else ``None``."""
+        if isinstance(func, ast.Name) and func.id in self.origin:
+            return self.origin[func.id]
+        if isinstance(func, ast.Attribute) and isinstance(func.value, ast.Name):
+            v = func.value.id
+            if v in self.origin:
+                return f"{self.origin[v]}.{self.aliases[v]}"
+        return None
+
     def resolve(self, call):
-        """``(kind, target, args)`` for ``call``: kind ``"package"``
+        """``(kind, target, args, func)`` for ``call``: kind ``"package"``
         (target: the package functions of that name), ``"local"`` (a
         definition in this file), ``"unnamed"`` (a local value, a
         subscript, a call result) or ``None`` (a method, a builtin or a
-        non-package function)."""
+        non-package function); ``func`` is the called expression, the
+        partial's first argument for a ``functools.partial``."""
         func, args = call.func, call.args
         if args and (
             (isinstance(func, ast.Name) and func.id in self.partials)
@@ -173,21 +251,23 @@ class _File:
             func, args = args[0], args[1:]
         name = self.name_of(func)
         if name in self.funcs and not (isinstance(func, ast.Name) and func.id in self.external):
-            return "package", self.funcs[name], args
+            return "package", self.funcs[name], args, func
         if isinstance(func, ast.Attribute):
-            return None, None, args
+            return None, None, args, func
         if isinstance(func, ast.Name):
             if func.id in self.defs:
-                return "local", self.defs[func.id], args
+                return "local", self.defs[func.id], args, func
             if func.id in self.external or func.id in self.local or hasattr(builtins, func.id):
-                return None, None, args
-        return "unnamed", None, args
+                return None, None, args, func
+        return "unnamed", None, args, func
 
 
-def _unset(files):
-    """Sorted ``path::func.param`` of every defaulted parameter of a
-    module-level package or entry function that no call in ``files``
-    (``path`` → source) passes a non-default value."""
+def _scan(files):
+    """Record every call in ``files`` (``path`` → source) on the
+    module-level package and entry functions it reaches.  Returns
+    ``(funcs, as_values)``: name → its ``_Function`` records, and the
+    names some file passes as a value (whose calls the scan cannot
+    see)."""
     trees = {path: ast.parse(src) for path, src in files.items()}
     funcs = {}
     for path, tree in trees.items():
@@ -195,7 +275,8 @@ def _unset(files):
             for node in tree.body:
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                     funcs.setdefault(node.name, []).append(_Function(path, node))
-    ctx = {path: _File(tree, funcs) for path, tree in trees.items()}
+    ctx = {path: _File(path, tree, funcs) for path, tree in trees.items()}
+    key = _constants(trees.values())
 
     # where each definition's ``**kwargs`` goes: the calls in its body
     # that spread it on
@@ -234,7 +315,7 @@ def _unset(files):
             elif kind == "unnamed":
                 unnamed.append(([], extra))
 
-    for c in ctx.values():
+    for path, c in ctx.items():
         # references called, or bound under their own name (then called
         # by that name), are not passed as values
         callees = {
@@ -247,10 +328,10 @@ def _unset(files):
             if not isinstance(node, ast.Call):
                 continue
             callees.add(id(node.func))
-            kind, target, args = c.resolve(node)
+            kind, target, args, func = c.resolve(node)
             if kind == "package":
                 for f in target:
-                    f.call(args, node.keywords)
+                    f.call(args, node.keywords, key if c.reaches(path, func, f) else None)
                     forward(f.node, node.keywords)
             elif kind == "local" and not isinstance(target, ast.ClassDef):
                 forward(target, node.keywords)
@@ -272,8 +353,34 @@ def _unset(files):
         for f in funcs[name]:
             for args, keywords in unnamed:
                 f.call(args, keywords)
+    return funcs, as_values
+
+
+def _unset(files):
+    """Sorted ``path::func.param`` of every defaulted parameter of a
+    module-level package or entry function that no call in ``files``
+    passes a non-default value."""
+    funcs, _ = _scan(files)
     return sorted(
         f"{f.key}.{p}" for fs in funcs.values() for f in fs for p in f.defaults if p not in f.set
+    )
+
+
+def _fixed(files):
+    """Sorted ``path::func.param`` of every required parameter of a
+    module-level private (``_``-prefixed) package or entry function to
+    which every call in ``files`` passes the same literal or module
+    constant.  A function some file passes as a value is skipped: its
+    calls are not all visible."""
+    funcs, as_values = _scan(files)
+    return sorted(
+        f"{f.key}.{p}"
+        for name, fs in funcs.items()
+        if name.startswith("_") and name not in as_values
+        for f in fs
+        if f.calls
+        for p in f.required
+        if len(f.values[p]) == 1 and None not in f.values[p]
     )
 
 
@@ -313,3 +420,31 @@ def test_every_option_is_set_by_some_call():
 
 def test_allowlist_holds_only_unset_options():
     assert sorted(ALLOWED) == [p for p in _unset(_files()) if p in ALLOWED]
+
+
+def test_scan_flags_a_required_parameter_every_call_fixes():
+    planted = {
+        f"{PKG}/m.py": (
+            "K = 3\n"
+            "def _h(df, col, n):\n    return df\n"
+            "def _v(x, k):\n    return x\n"
+            "def _esc(x, c):\n    return x\n"
+            "def run(df, y):\n"
+            "    _h(df, 'id', K)\n    _h(y, col='id', n=3)\n"
+            "    _v(df, k=1)\n    _v(df, 2)\n"
+            "    _esc(df, 'a')\n    return map(_esc, [df])\n"
+        ),
+        f"{PKG}/other.py": "def _h(a, b, c):\n    return a\n",
+        "tests/test_m.py": f"from {PKG}.m import _h\n_h(0, 'id', 3)\n",
+    }
+    m = f"{PKG}/m.py::"
+    assert _fixed(planted) == [m + "_h.col", m + "_h.n"]
+
+
+def test_no_private_helper_parameter_is_fixed_by_every_call():
+    fixed = _fixed(_files())
+    assert fixed == [], (
+        "required parameters of private helpers to which every call "
+        "passes the same literal or module constant (fold the value "
+        "into the helper and delete the parameter):\n  " + "\n  ".join(fixed)
+    )

@@ -98,6 +98,11 @@ _BNLJ_OK = {
     # 1-row corpus-count onto the bounded feedback-term relation
     "doc_prf_expansion",
     "doc_bm25_prf_topk",
+    # the serving composition plans its BM25 and PRF legs in the
+    # returned frame (the MMR greedy is a grouped map over them), so
+    # it inherits their 1-row corpus-stats broadcast; every BNLJ in
+    # its plan has that 1-row aggregate as build side
+    "retrieval_serving_pipeline",
     # drift monitors (r10): broadcast 1-row edge/margin/total
     # relations onto the tagged union and the <= buckets-row bucket
     # table (same totals-relation class as dashboard_tiles)
@@ -107,8 +112,7 @@ _BNLJ_OK = {
     # broadcast 1-row entity-universe count onto the pair table (r10)
     "events_cooccurrence_lift",
     # inherits the vec_top_k_bruteforce broadcast-query crossJoin for
-    # its candidate pool (r10 MMR; the greedy rounds run during
-    # construction over the staged pool and return a local relation)
+    # its candidate pool (r10 MMR; the greedy runs as a grouped map)
     "vec_mmr_rerank",
     # broadcast 1-row corpus-total onto the <= v-row top relation (r10)
     "doc_vocab_coverage",
@@ -122,9 +126,6 @@ _BNLJ_OK = {
     # r11: inherits the vec_top_k_bruteforce broadcast-query crossJoin
     # over the predicate-filtered corpus
     "vec_filtered_topk",
-    # r12: the grouped-map MMR dispatch inherits the identical
-    # vec_top_k_bruteforce broadcast-query pool generation
-    "vec_mmr_rerank_batch",
     # r12: the PQ recall curve inherits vec_ann_recall_profile's
     # 1-row truth/matched tile broadcasts + the bruteforce scorer
     "vec_ann_recall_profile_pq",

@@ -98,7 +98,7 @@ def test_ntile_distributed_equals_native_ntile(spark, n):
     got = {
         (r["__k_b"], r.b)
         for r in _ntile_distributed(
-            df, [F.desc("v"), F.asc("k")], 5, "k", "b"
+            df, [F.desc("v"), F.asc("k")], "k", "b"
         ).collect()
     }
     w = Window.orderBy(F.desc("v"), F.asc("k"))

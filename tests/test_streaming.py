@@ -610,9 +610,7 @@ def test_stream_doc_dedup_replay_ignores_own_partition(spark, tmp_path):
     spark.createDataFrame(waves[2], schema).write.mode("overwrite").parquet(
         f"{table}/ingest_batch=2"
     )
-    _delta_features(
-        spark.createDataFrame(waves[2], schema), "doc_id", "text", 6, 3, 3
-    ).write.mode("overwrite").parquet(f"{index}/ingest_batch=2")
+    _delta_features(spark.createDataFrame(waves[2], schema)).write.mode("overwrite").parquet(f"{index}/ingest_batch=2")
     stream = _stage_doc_waves(spark, tmp_path, waves, "dr")
     stream_doc_dedup_to_parquet(
         stream, table, str(tmp_path / "dr_ckpt"), index

@@ -86,17 +86,17 @@ def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     )
 
 
-def _shingle_cte(table_expr: str, shingle_n: int, id_sel: str) -> str:
+def _shingle_cte(table_expr: str, id_sel: str) -> str:
     """DuckDB distinct-shingle projection over ``table_expr`` —
-    mirrors ``text.shingled`` (whitespace tokens, space-joined
-    n-grams)."""
+    mirrors ``text.shingled`` (whitespace tokens, space-joined word
+    3-grams)."""
     toks = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
-    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(shingle_n))
+    parts = ", ".join(f"{toks}[i+{j + 1}]" for j in range(3))
     return (
         f"SELECT DISTINCT {id_sel} unnest(list_transform("
-        f"range(len({toks}) - {shingle_n - 1}), "
+        f"range(len({toks}) - 2), "
         f"i -> concat_ws(' ', {parts}))) AS s "
-        f"FROM {table_expr} WHERE len({toks}) >= {shingle_n}"
+        f"FROM {table_expr} WHERE len({toks}) >= 3"
     )
 
 
@@ -106,8 +106,8 @@ def contamination_overlap_sql(corpus_expr: str, bench_expr: str) -> str:
     CTE name) — the reusable form compositions nest (the
     training-freeze pipeline decontaminates the post-dedup relation
     against the raw benchmark carve-out, two different tables)."""
-    corpus_sh = _shingle_cte(corpus_expr, 3, "doc_id,")
-    bench_sh = _shingle_cte(bench_expr, 3, "")
+    corpus_sh = _shingle_cte(corpus_expr, "doc_id,")
+    bench_sh = _shingle_cte(bench_expr, "")
     return f"""
 WITH corpus_sh AS ({corpus_sh}),
 bench_sh AS (SELECT DISTINCT s FROM ({bench_sh}))

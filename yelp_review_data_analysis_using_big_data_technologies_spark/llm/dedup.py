@@ -7,8 +7,9 @@ all-pairs comparison:
 - :func:`exact_dedup` — hash-groupBy on ``sha2(text, 256)``.
 - :func:`near_dup_pairs_banded` — banded MinHash LSH: signature →
   band keys → bucket self-join → exact Jaccard verification.
-- :func:`simhash` / :func:`simhash_buckets` — bit-majority SimHash
-  histogram; equal values ⇒ near-identical token multisets.
+- :func:`simhash_buckets` — bit-majority SimHash histogram (word 0
+  of :func:`simhash_words`); equal values ⇒ near-identical token
+  multisets.
 - :func:`simhash_near_dup_pairs` — 64-bit SimHash as 4×16-bit words
   (one staged md5 pass); the words double as Hamming bands
   (pigeonhole: exact recall for distance ≤ 3), verification =
@@ -24,7 +25,7 @@ with content keys.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import spread, stage
@@ -42,9 +43,8 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relat
 #: Spark's ``conv``).
 _HEX = "0123456789abcdef"
 
-#: SimHash width in bits.  16 keeps the generated expression (one
-#: aggregate per bit) readable while exercising the full algorithm;
-#: widen to 64 for production collision rates.
+#: Width in bits of the :func:`simhash_buckets` key and its SQL twin:
+#: one 16-bit word of :func:`simhash_words`.
 SIMHASH_BITS = 16
 
 #: The banded MinHash LSH shape every registered near-dup entry and
@@ -117,8 +117,6 @@ def _banded_keys(
     id_col: str,
     text_col: str,
     num_hashes: int,
-    bands: int,
-    shingle_n: int,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared LSH staging for the self-join and the delta-vs-corpus
     join: returns ``(base, band_keys)`` where ``base`` is the staged
@@ -126,8 +124,8 @@ def _banded_keys(
     dropped — they can never verify and their all-NULL band keys
     collide quadratically) and ``band_keys`` is the exploded
     ``(__id, band_key)`` relation."""
-    rows = num_hashes // bands
-    assert rows * bands == num_hashes, "bands must divide num_hashes"
+    rows = num_hashes // BANDS
+    assert rows * BANDS == num_hashes, "bands must divide num_hashes"
     # ``spread`` the narrow (id, text) source first: off a one-row-group
     # scan the shingle+signature build otherwise runs as a single task
     # (measured 5.8 s of the 5.9 s query at sf0.1) — and a bare
@@ -136,7 +134,7 @@ def _banded_keys(
     # warehouse scale (input splits already ≥ cluster parallelism).
     src = spread(df.select(F.col(id_col), F.col(text_col)))
     base = stage(
-        shingled(src, [id_col], text_col, shingle_n, out="__sh0")
+        shingled(src, [id_col], text_col, SHINGLE_N, out="__sh0")
         .select(
             F.col(id_col).alias("__id"),
             F.array_distinct(F.col("__sh0")).alias("__sh"),
@@ -148,7 +146,7 @@ def _banded_keys(
     band_keys = base.select(
         "__id",
         F.explode(
-            band_key_array(F.col("__sig"), num_hashes, bands)
+            band_key_array(F.col("__sig"), num_hashes, BANDS)
         ).alias("band_key"),
     )
     return base, band_keys
@@ -200,9 +198,7 @@ def near_dup_pairs_banded(
     # registry (callers release after materialization): the plan
     # references the staged relation three times (band explode + both
     # verification sides); at warehouse scale it's a staging table.
-    base, band_keys = _banded_keys(
-        df, id_col, text_col, num_hashes, BANDS, SHINGLE_N
-    )
+    base, band_keys = _banded_keys(df, id_col, text_col, num_hashes)
     if max_bucket is not None:
         kept = (
             band_keys.groupBy("band_key")
@@ -287,12 +283,8 @@ def dedup_against_corpus(corpus: DataFrame, delta: DataFrame) -> DataFrame:
         .drop("__h")
     )
 
-    cbase, ckeys = _banded_keys(
-        corpus, "doc_id", "text", NUM_HASHES, BANDS, SHINGLE_N
-    )
-    dbase, dkeys = _banded_keys(
-        delta, "doc_id", "text", NUM_HASHES, BANDS, SHINGLE_N
-    )
+    cbase, ckeys = _banded_keys(corpus, "doc_id", "text", NUM_HASHES)
+    dbase, dkeys = _banded_keys(delta, "doc_id", "text", NUM_HASHES)
     matched = match_banded_candidates(
         dbase, dkeys, cbase, ckeys, "doc_id", THRESHOLD
     )
@@ -362,17 +354,6 @@ def _jaccard_postings(
     )
 
 
-def _retained_df(postings: DataFrame, max_df: int | None) -> DataFrame:
-    """``(__s, __df)`` document frequency of every shingle in staged
-    ``(__id, __s)`` postings, cut to ``__df <= max_df`` when set — the
-    one place a ``max_df`` becomes a retained-shingle relation, so a
-    plan can never run on a relation cut at a different ``max_df``."""
-    dfreq = postings.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
-    if max_df is not None:
-        dfreq = dfreq.filter(F.col("__df") <= max_df)
-    return dfreq
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -404,27 +385,20 @@ def ngram_jaccard_pairs(
     # re-tokenizing the corpus per reference dominates runtime.  At
     # warehouse scale this is a staging table.
     sh = _jaccard_postings(df, id_col, text_col, shingle_n)
-    dfreq = None if max_df is None else _retained_df(sh, max_df)
-    return _pairs_from_postings(sh, dfreq, threshold)
-
-
-def _pairs_from_postings(
-    sh: DataFrame, dfreq: DataFrame | None, threshold: float
-) -> DataFrame:
-    """:func:`ngram_jaccard_pairs` over staged raw postings ``sh``,
-    restricted to the shingles of the retained ``(__s, __df)``
-    relation ``dfreq`` (``None``: no df cut).  The auto dispatcher
-    hands in the relation its profile already aggregated (r16 opt,
-    guide §2.4 — two consumers keyed the same way share ONE
-    aggregate; the rows are identical to recomputing it)."""
-    if dfreq is not None:
+    if max_df is not None:
+        kept = (
+            sh.groupBy("__s")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .filter(F.col("__df") <= max_df)
+            .select("__s")
+        )
         # Stage the FILTERED postings too (r16 opt, guide §1.2): the
         # plan reads them three times (size aggregate + both self-join
         # sides), and each un-staged reference re-runs the df
         # aggregate + the retain join over the cached raw postings —
         # planned-time exchange reuse does not dedup them (38
         # InMemoryTableScans in the before-plan).  Rows identical.
-        sh = stage(sh.join(dfreq.select("__s"), on="__s"))
+        sh = stage(sh.join(kept, on="__s"))
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
     shared = (
         sh.alias("a")
@@ -587,244 +561,6 @@ WHERE round(c * 1.0 / (szl.sz + szr.sz - c), 6) >= {threshold}
 """
 
 
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = MAX_DF,
-) -> DataFrame:
-    """:func:`ngram_jaccard_pairs` with PPJoin-style PREFIX FILTERING
-    (Chaudhuri et al. ICDE 2006; Xiao et al. TODS 2011) — identical
-    output, candidate generation bounded by prefixes instead of whole
-    posting lists.
-
-    Construction: order every document's shingles by one GLOBAL total
-    order (document frequency ascending, shingle ascending — rare
-    shingles first, so prefixes index the least-shared tokens), and
-    put only each document's first ``|x| - ceil(t·|x|) + 1`` shingles
-    into the inverted index.  Any pair with ``J >= t`` must overlap by
-    ``alpha = ceil(t/(1+t)·(|x|+|y|))`` shingles, and for every
-    size-feasible pair (``|y| >= t·|x|``, a necessary condition for
-    ``J >= t``) this alpha is at least ``ceil(t·|x|)``, so the
-    conservative prefix is longer than the classic ``|x| - alpha + 1``
-    bound requires — prefixes of BOTH members intersect and no result
-    pair is lost.  Candidates then verify EXACTLY against the full
-    posting lists, so the output (ids, rounded Jaccard) is
-    bit-identical to the unfiltered operator — the driver twin for
-    this entry IS :func:`ngram_jaccard_sql`, same as the base join.
-
-    At 100 TB the difference is the self-join's candidate volume: the
-    plain posting join pays Σ df² over ALL retained shingles, the
-    prefix join only over prefix postings — at t=0.5 half of each
-    document's shingles (the commonest half) never enter the join
-    (``scripts/measure_prefix_jaccard.py`` at c84e9fc: 90.9% fewer candidates
-    and a faster wall on a Zipf-ish corpus).  The trade is two fixed
-    extra passes (the per-doc ranking window and the candidate-verify
-    joins), so on corpora where Σ df² is already small — low
-    thresholds, tiny vocabularies, aggressive ``max_df`` — the base
-    operator is cheaper (the sf0.1 bench fixture is exactly that
-    regime: t=0.3 keeps 70% of each doc in the prefix, so the cut
-    cannot pay for the ranking pass).  Pick by regime — or let
-    :func:`ngram_jaccard_pairs_auto` pick from the one-pass candidate
-    profile; both return identical rows.  ``max_df`` stays as the
-    boilerplate backstop; sizes and Jaccard are computed over the
-    retained-shingle space exactly as in the base operator.
-    """
-    sh = _jaccard_postings(df, id_col, text_col, shingle_n)
-    return _prefix_pairs_from_postings(sh, _retained_df(sh, max_df), threshold)
-
-
-def _prefix_pairs_from_postings(
-    sh: DataFrame, dfreq: DataFrame, threshold: float
-) -> DataFrame:
-    """:func:`ngram_jaccard_pairs_prefix` over staged raw postings
-    ``sh`` and their retained ``(__s, __df)`` relation ``dfreq`` (the
-    df also orders each prefix)."""
-    # staged (r16 opt, guide §1.2): read three times — the ranking
-    # window plus both candidate-verify sides; see ngram_jaccard_pairs
-    sh = stage(sh.join(dfreq, on="__s"))
-    # sizes over the retained space (same bookkeeping as the base op);
-    # window count avoids a second aggregate+join over the postings
-    w_doc = Window.partitionBy("__id")
-    w_ord = Window.partitionBy("__id").orderBy("__df", "__s")
-    ranked = sh.select(
-        "__id",
-        "__s",
-        F.count(F.lit(1)).over(w_doc).alias("__sz"),
-        F.row_number().over(w_ord).alias("__rn"),
-    )
-    prefix = ranked.filter(
-        F.col("__rn")
-        <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
-    ).select("__id", "__s", "__sz")
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), on="__s")
-        .filter(
-            (F.col("a.__id") < F.col("b.__id"))
-            # size feasibility both ways: |y| >= t|x| is necessary for
-            # J >= t, and cutting infeasible pairs here keeps the
-            # verify join from paying for them
-            & (F.col("b.__sz") >= F.lit(threshold) * F.col("a.__sz"))
-            & (F.col("a.__sz") >= F.lit(threshold) * F.col("b.__sz"))
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.col("a.__sz").alias("__sza"),
-            F.col("b.__sz").alias("__szb"),
-        )
-        .distinct()
-    )
-    pa = sh.select(F.col("__id").alias("id_a"), "__s")
-    pb = sh.select(F.col("__id").alias("id_b"), "__s")
-    shared = (
-        cand.join(pa, on="id_a")
-        .join(pb, on=["id_b", "__s"])
-        .groupBy("id_a", "id_b", "__sza", "__szb")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
-    return (
-        shared.withColumn(
-            "jaccard",
-            F.round(
-                F.col("__c") / (F.col("__sza") + F.col("__szb") - F.col("__c")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def ngram_jaccard_candidate_profile(
-    postings: DataFrame,
-    dfreq: DataFrame,
-    threshold: float,
-) -> dict[str, int]:
-    """One-pass-per-plan candidate-volume predictor over staged raw
-    postings: the EXACT pre-dedup candidate-pair counts the base and
-    prefix self-joins would generate — ``Σ df·(df−1)/2`` over retained
-    shingles for the base plan, the same sum over PREFIX postings for
-    the PPJoin plan — without running either join.  The self-join's
-    candidate volume is the quadratic term that dominates both plans
-    at scale; the profile costs two skinny aggregates (plus the same
-    per-doc ranking window the prefix plan would run anyway), so
-    deciding is ~linear while being wrong is quadratic.  Returns
-    driver-side scalars (a bounded 2-value collect, same class as the
-    LSH ``band_bucket_profile`` pre-flight).
-
-    ``dfreq`` is the retained ``(__s, __df)`` relation of
-    ``postings`` (:func:`_retained_df`), which the dispatcher stages
-    once and shares between this profile and whichever plan wins
-    (r16 opt).  The two plan sums are unioned into ONE 2-row collect —
-    one job instead of two serial ones; identical integers
-    either way (the union branches are the exact same aggregates)."""
-    pair_sum = F.sum(
-        (F.col("__df") * (F.col("__df") - 1) / 2).cast("bigint")
-    )
-    full_agg = dfreq.agg(pair_sum.alias("n")).select(
-        F.lit("full").alias("plan"), "n"
-    )
-    f = postings.join(dfreq, on="__s")
-    ranked = f.select(
-        "__id",
-        "__s",
-        F.count(F.lit(1)).over(Window.partitionBy("__id")).alias("__sz"),
-        F.row_number()
-        .over(Window.partitionBy("__id").orderBy("__df", "__s"))
-        .alias("__rn"),
-    )
-    prefix_agg = (
-        ranked.filter(
-            F.col("__rn")
-            <= F.col("__sz") - F.ceil(F.lit(threshold) * F.col("__sz")) + 1
-        )
-        .groupBy("__s")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .agg(pair_sum.alias("n"))
-        .select(F.lit("prefix").alias("plan"), "n")
-    )
-    counts = {
-        r["plan"]: r["n"] or 0
-        for r in full_agg.unionByName(prefix_agg).collect()
-    }
-    return {
-        "candidates_full": int(counts["full"]),
-        "candidates_prefix": int(counts["prefix"]),
-    }
-
-
-#: Candidate cut the prefix plan must promise before
-#: :func:`ngram_jaccard_pairs_auto` picks it over the base plan.
-_PREFIX_PREFER_RATIO = 2.0
-
-
-def ngram_jaccard_pairs_auto(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = MAX_DF,
-) -> DataFrame:
-    """Regime-selected exact n-gram Jaccard pairs: tokenize ONCE
-    (staged postings shared with whichever plan wins), run the
-    candidate profile, and dispatch to the PPJoin prefix plan only
-    when it predicts at least a ``_PREFIX_PREFER_RATIO``-fold
-    candidate cut — the margin that pays for the prefix plan's two
-    fixed extra passes (the per-doc ranking window and the
-    candidate-verify joins).
-
-    Measured (scripts/measure_prefix_jaccard.py at c84e9fc, local[32]): the
-    profile's predictions are EXACT — on the Zipf-ish favorable corpus
-    (3000 docs, vocab 50, t=0.5) predicted = measured 1,004,428 vs
-    91,356 candidates (an 11.0× cut → prefix chosen); on a
-    rare-shingle corpus (vocab 2000, t=0.3) predicted = measured
-    15,447 vs 10,906 (1.42× → base chosen).  At toy scale both walls
-    are scheduling-bound (~6 s each) — the candidate volume is the
-    term that diverges quadratically at 100 TB, which is why the
-    dispatcher keys on it and not on a wall estimate; the sf0.1 bench
-    already shows the base plan ~2× cheaper in the unfavorable regime
-    (doc_ngram_jaccard_prefix 7.7–8.4 s vs the base's ~4 s).
-    A ratio of 2 splits the measured regimes with headroom on
-    both sides; the regime TEST pins the choice on both shapes
-    (tests/test_prefix_jaccard.py).
-
-    Output is identical rows either way (both plans verify exactly),
-    so the driver twin is :func:`ngram_jaccard_sql` regardless of the
-    plan chosen.
-
-    Dispatch cost: the profile is LINEAR (a df aggregate + the same
-    per-doc ranking window the prefix plan runs), measured ~2 s of
-    stage-scheduling overhead at sf0.1 local — noise against the
-    quadratic join term the decision protects at scale.  There is no
-    sound cheaper skip: any posting-fraction heuristic (prefixes keep
-    ~(1−t) of postings → estimate the cut as f²) is defeated by the
-    viral-shingle regime, where f ≈ 0.77 yet the true cut is ~875×
-    because the rare-first prefix excludes exactly the shingle owning
-    the df² mass (scripts/measure_viral_shingle.py at c84e9fc).  Callers that
-    know their regime call the base/prefix operator directly.
-
-    r16 opt (guide §2.4): the retained ``(__s, __df)`` aggregate is
-    staged ONCE and shared by the profile AND the chosen plan — the
-    base plan's retain semi-join and the prefix plan's df join are
-    the same relation the profile already computed, so dispatching no
-    longer costs an extra full df aggregate over the postings; the
-    profile's two plan sums collect in one 2-row job.  Same counts,
-    same dispatch decision, identical output rows."""
-    sh = _jaccard_postings(df, id_col, text_col, shingle_n)
-    dfreq = stage(_retained_df(sh, max_df))
-    prof = ngram_jaccard_candidate_profile(sh, dfreq, threshold)
-    use_prefix = prof["candidates_full"] > _PREFIX_PREFER_RATIO * max(
-        prof["candidates_prefix"], 1
-    )
-    op = _prefix_pairs_from_postings if use_prefix else _pairs_from_postings
-    return op(sh, dfreq, threshold)
-
-
 def _hex4_to_int(hexstr: Column) -> Column:
     """First-4-hex-chars → int via ``instr`` arithmetic — portable to
     engines without ``conv(x, 16, 10)``."""
@@ -835,63 +571,29 @@ def _hex4_to_int(hexstr: Column) -> Column:
     return out
 
 
-def simhash(text: Column | str) -> Column:
-    """Bit-majority SimHash over whitespace tokens.
-
-    Each token hashes to a ``SIMHASH_BITS``-bit value (md5 prefix); output bit
-    j is set iff the majority of token hashes have bit j set
-    (``2 * sum(bit_j) > n_tokens``).  Near-identical token multisets
-    produce equal (or Hamming-close) values.  Pure arithmetic over
-    higher-order functions — portable to the SQL oracle.
-    """
-    tks = tokens(text)
-    vals = F.transform(tks, lambda t: _hex4_to_int(F.md5(t)))
-    n = F.size(vals)
-
-    def bit_sum(j: int) -> Column:
-        # Two-parameter lambdas are index-taking in pyspark HOFs; the
-        # lambda runs eagerly, so closing over j is safe.
-        return F.aggregate(
-            vals,
-            F.lit(0),
-            lambda acc, v: acc + F.floor(v / F.lit(2**j)).cast("int") % 2,
-        )
-
-    out = F.lit(0)
-    for j in range(SIMHASH_BITS):
-        out = out + F.when(bit_sum(j) * 2 > n, F.lit(2**j)).otherwise(F.lit(0))
-    return out
-
-
 def simhash_buckets(df: DataFrame) -> DataFrame:
     """SimHash histogram: bucket value → doc count (buckets with
     count > 1 are near-dup groups).  One hash aggregate on a
     ``SIMHASH_BITS``-bit integer key.
 
-    The default 16-bit hash equals word 0 of :func:`simhash_words`, so
-    it rides the staged one-md5-pass builder; other widths fall back
-    to the inline expression (oracle-parity path).  NULL-text docs are
-    excluded on both paths (and in the SQL twin): the staged word
-    array null-propagates while the inline/oracle coalesce folds NULL
-    to bucket 0 — the three answers disagreed, and a "bucket" of
-    no-content docs is a near-dup group of nothing anyway."""
-    df = df.filter(F.col("text").isNotNull())
-    if SIMHASH_BITS == 16:
-        hashed = with_simhash_words(
-            spread(df.select(F.col("text"))),
-            [],
-            "text",
-            n_words=1,
-        ).select(F.col("__w")[0].alias("simhash"))
-    else:
-        hashed = df.select(simhash("text").alias("simhash"))
+    The hash is word 0 of :func:`simhash_words`, built by the staged
+    one-md5-pass builder.  NULL-text docs are excluded (and in the SQL
+    twin): the staged word array null-propagates while the twin's
+    coalesce folds NULL to bucket 0, and a "bucket" of no-content docs
+    is a near-dup group of nothing anyway."""
+    hashed = with_simhash_words(
+        spread(df.filter(F.col("text").isNotNull()).select(F.col("text"))),
+        [],
+        "text",
+        n_words=1,
+    ).select(F.col("__w")[0].alias("simhash"))
     return hashed.groupBy("simhash").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 def simhash_sql(text_expr: str) -> str:
-    """DuckDB twin of :func:`simhash` for oracle checks — generated
-    from the same constants so both engines compute bit-for-bit the
-    same value."""
+    """DuckDB twin of the :func:`simhash_buckets` key (word 0 of
+    :func:`simhash_words`) for oracle checks — generated from the same
+    constants so both engines compute bit-for-bit the same value."""
     tok = f"regexp_split_to_array({text_expr}, '[ \\t\\n\\x0B\\f\\r]+')"
     digit = (
         lambda pos, w: f"(instr('{_HEX}', substr(md5(t), {pos}, 1)) - 1) * {w}"
@@ -1242,9 +944,7 @@ def band_bucket_profile(
     representative-dedup of the flagged buckets) is the right plan.
     Aggregation is a single partial-agg pass over the band keys —
     no join, safe at any corpus size."""
-    _, band_keys = _banded_keys(
-        df, id_col, text_col, num_hashes, BANDS, SHINGLE_N
-    )
+    _, band_keys = _banded_keys(df, id_col, text_col, num_hashes)
     per_bucket = band_keys.groupBy("band_key").agg(
         F.count(F.lit(1)).alias("__bn")
     )

@@ -138,8 +138,8 @@ PII_REQUIRED_LITERAL: dict[str, str] = {
 }
 
 
-def _redacted(text_col: Column | str) -> Column:
-    out = F.col(text_col) if isinstance(text_col, str) else text_col
+def _redacted() -> Column:
+    out = F.col("text")
     for name, pat, repl in PII_PATTERNS:
         lit = PII_REQUIRED_LITERAL[name]
         out = F.when(
@@ -148,8 +148,8 @@ def _redacted(text_col: Column | str) -> Column:
     return out
 
 
-def _n_redactions(text_col: Column | str) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
+def _n_redactions() -> Column:
+    c = F.col("text")
     out = F.lit(0)
     for name, pat, _repl in PII_PATTERNS:
         lit = PII_REQUIRED_LITERAL[name]
@@ -168,8 +168,8 @@ def redact_pii(df: DataFrame) -> DataFrame:
     ORIGINAL text, so overlapping pattern classes (an email whose
     domain embeds digits, say) count what the raw text contained, not
     the post-substitution string."""
-    return df.withColumn("clean_text", _redacted("text")).withColumn(
-        "n_redactions", _n_redactions("text")
+    return df.withColumn("clean_text", _redacted()).withColumn(
+        "n_redactions", _n_redactions()
     )
 
 

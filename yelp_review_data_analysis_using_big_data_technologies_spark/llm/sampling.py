@@ -324,12 +324,12 @@ def _fmt_double(v: float) -> str:
     return format(float(v), ".17e")
 
 
-def _domain_weight_case(domain_col: str, weights: Mapping[str, float]) -> Column:
+def _domain_weight_case(weights: Mapping[str, float]) -> Column:
     """``CASE domain WHEN d THEN w ...`` as a Column (NULL for
     untargeted domains — callers filter those out first)."""
     expr = None
     for d, v in weights.items():
-        cond = F.col(domain_col) == F.lit(d)
+        cond = F.col("domain") == F.lit(d)
         lit = F.lit(float(v))
         expr = F.when(cond, lit) if expr is None else expr.when(cond, lit)
     return expr
@@ -377,7 +377,7 @@ def mixture_rates(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("__tok").alias("total_tokens"),
         )
-        .withColumn("target_weight", _domain_weight_case("domain", weights))
+        .withColumn("target_weight", _domain_weight_case(weights))
     )
     feasible = totals.agg(
         F.min(F.col("total_tokens") / F.col("target_weight")).alias("__B")
@@ -483,7 +483,6 @@ def _mixture_threshold_ctes(
     weights: Mapping[str, float],
     table: str,
     domain_expr: str,
-    id_expr: str,
     tokens_expr: str,
 ) -> str:
     """Shared ``__d``/``__t``/``__b``/``__r``/``__h`` CTE chain — the
@@ -496,7 +495,7 @@ def _mixture_threshold_ctes(
     )
     span = int(_U32_SPAN)
     return f"""__d AS (
-  SELECT {domain_expr} AS domain, {id_expr} AS __id,
+  SELECT {domain_expr} AS domain, doc_id AS __id,
          CAST({tokens_expr} AS BIGINT) AS __tok
   FROM {table} WHERE {domain_expr} IN ({in_list})
 ), __t AS (
@@ -535,7 +534,7 @@ def mixture_sample_sql(
     return f"""
 SELECT {cols}
 FROM {table}
-JOIN (WITH {_mixture_threshold_ctes(weights, table, domain_expr, "doc_id", tokens_expr)}
+JOIN (WITH {_mixture_threshold_ctes(weights, table, domain_expr, tokens_expr)}
       SELECT domain, __thr FROM __h) __mx
   ON {domain_expr} = __mx.domain
 WHERE {b} < __mx.__thr
@@ -554,7 +553,7 @@ def mixture_report_sql(
     clamp."""
     b = hash_bucket_sql("d.__id", MIXTURE_SALT)
     return f"""
-WITH {_mixture_threshold_ctes(weights, table, domain_expr, "doc_id", tokens_expr)}, __k AS (
+WITH {_mixture_threshold_ctes(weights, table, domain_expr, tokens_expr)}, __k AS (
   SELECT d.domain, COUNT(*) AS kept_docs,
          CAST(SUM(d.__tok) AS BIGINT) AS kept_tokens
   FROM __d d JOIN __h h USING (domain)

@@ -435,13 +435,13 @@ def _bucket(col: Column) -> Column:
     return out % DSIR_BUCKETS
 
 
-def _feature_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+def _feature_stream(df: DataFrame) -> DataFrame:
     """Explode each doc into its hashed unigram+bigram feature buckets:
-    ``(id, bucket)`` — one explode over one in-row array concat."""
+    ``(doc_id, bucket)`` — one explode over one in-row array concat."""
     return (
-        df.select(F.col(id_col), ltx.tokens(text_col).alias("tk"))
+        df.select(F.col("doc_id"), ltx.tokens("text").alias("tk"))
         .select(
-            id_col,
+            "doc_id",
             F.explode(
                 F.expr(
                     "concat(tk, transform(slice(tk, 1, size(tk) - 1), "
@@ -449,7 +449,7 @@ def _feature_stream(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
                 )
             ).alias("f"),
         )
-        .select(id_col, _bucket(F.col("f")).alias("b"))
+        .select("doc_id", _bucket(F.col("f")).alias("b"))
     )
 
 
@@ -488,8 +488,8 @@ def importance_weights(docs: DataFrame, target: DataFrame) -> DataFrame:
     # arithmetic is the dominant per-row cost, never pay it twice),
     # and the totals derive from the 1024-row models instead of a
     # second pass over either corpus.
-    raw_feats = stage(_feature_stream(docs, "text", "doc_id"))
-    tgt_feats = _feature_stream(target, "text", "doc_id")
+    raw_feats = stage(_feature_stream(docs))
+    tgt_feats = _feature_stream(target)
     cr = raw_feats.groupBy("b").agg(F.count(F.lit(1)).alias("cr"))
     ct = tgt_feats.groupBy("b").agg(F.count(F.lit(1)).alias("ct"))
     nr = cr.agg(F.sum("cr").alias("__nr"))

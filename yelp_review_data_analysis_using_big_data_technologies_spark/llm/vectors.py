@@ -372,7 +372,6 @@ def mmr_rerank(
     k: int = 8,
     pool: int = 20,
     lam: float = 0.7,
-    distributed: bool | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance re-rank (Carbonell & Goldstein,
     SIGIR'98) → ``(query_id, vec_id, rel, mmr, rk)``: greedily pick
@@ -384,13 +383,11 @@ def mmr_rerank(
 
     Scale shape: the DISTRIBUTED work is the candidate generation
     (:func:`top_k_bruteforce` over the full corpus — swap in the IVF
-    searcher at scale); the greedy selection is inherently sequential
-    but runs over the |Q|·pool-row candidate relation and its
-    |Q|·pool² pairwise-similarity table, both staged once and bounded
-    by construction (pool=20 → 380 sims per query).  Each of the
-    ``k−1`` unrolled steps is one join + one bounded per-query window
-    — the fixed-iteration pattern of ``doc_pagerank``, on relations
-    thousands of times smaller.
+    searcher at scale); the greedy selection is sequential within a
+    query but independent across queries, so it runs as one grouped
+    map per query over that query's pool rows and its pool²
+    pairwise-similarity rows (pool=20 → 380 sims per query), see
+    :func:`mmr_rerank_candidates`.
 
     Determinism: relevance and pairwise sims carry the 6-dp contract;
     each argmax orders by (rounded score DESC, id ASC), so the twin's
@@ -407,7 +404,6 @@ def mmr_rerank(
         embeddings,
         k=k,
         lam=lam,
-        distributed=distributed,
     )
 
 
@@ -415,11 +411,11 @@ def _mmr_greedy_pool(pool: dict, sim, k: int, lam: float) -> list:
     """The inherently-sequential greedy over ONE query's candidate
     pool: ``pool`` maps id → rel (duplicates already max-resolved),
     ``sim(a, b)`` returns the 6-dp pairwise cosine.  Returns
-    ``[(id, rel, mmr, rk)]``.  Shared VERBATIM by the driver path and
-    the Arrow-batched grouped-map path of
-    :func:`mmr_rerank_candidates`, so the two are bit-identical by
-    construction (same IEEE op order, same ``_round6``, same
-    (score DESC, id ASC) tie-break)."""
+    ``[(id, rel, mmr, rk)]``.  Score arithmetic matches the SQL
+    twin's expression bit-for-bit: same IEEE op order on doubles, and
+    ``_round6`` reproduces ``F.round``'s BigDecimal HALF_UP (Python's
+    repr and Java's Double.toString emit the same shortest round-trip
+    decimal); ties break on (score DESC, id ASC)."""
     one_m = 1.0 - lam
     selected: list = []
     remaining = dict(pool)
@@ -449,8 +445,6 @@ def mmr_rerank_candidates(
     embeddings: DataFrame,
     k: int = 8,
     lam: float = 0.7,
-    distributed: bool | None = None,
-    distributed_min_queries: int = 33,
 ) -> DataFrame:
     """Greedy MMR over PRE-SCORED candidates: ``cand_rel`` carries
     ``(query_id, vec_id, rel)`` where ``rel`` is any relevance
@@ -463,16 +457,10 @@ def mmr_rerank_candidates(
     :func:`mmr_rerank` — the greedy body lives here, the cosine
     front-end there.
 
-    Execution dispatch (r12, the r11 verdict's large-|Q| ask): the
-    greedy is per-query independent, so for LARGE query batches it
-    runs as an Arrow-batched ``applyInPandas`` grouped-map per
-    query_id — fully distributed, driver state O(1) — while small
-    batches keep the two-collect driver path (one grouped-map stage
-    costs a shuffle that never pays at |Q| ≤ a few dozen).
-    ``distributed=None`` auto-dispatches on the number of distinct
-    query ids vs ``distributed_min_queries``; both paths run the
-    IDENTICAL :func:`_mmr_greedy_pool` arithmetic (equality pinned in
-    tests/test_mmr.py), so the choice is semantically invisible."""
+    Execution: the greedy is per-query independent, so it runs as an
+    Arrow-batched ``applyInPandas`` grouped map, one group per
+    ``query_id`` — driver state is O(1) in the number of queries and
+    building the plan runs no Spark job."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if not 0.0 <= lam <= 1.0:
@@ -496,110 +484,63 @@ def mmr_rerank_candidates(
             "__ia",
             "__ib",
             F.round(cosine("__va", "__vb"), 6).alias("__s"),
+            F.lit(False).alias("__isrel"),
         )
     )
-    # The DISTRIBUTED work ends here: candidate scoring and the
-    # |Q|·pool² pairwise-similarity table.  Both relations are bounded
-    # by construction (pool dials, not data size — the codebook/seed
-    # class of driver-side state, NOT a data collect), so the
-    # inherently-sequential greedy runs ONCE over the collected pool
-    # instead of launching a join + window + collect per round: the
-    # r10 shape paid ~k Spark jobs of pure scheduling latency
-    # (measured 6.2 s at sf0.1 for 100 candidate rows); this shape
-    # pays two collects.  Score arithmetic matches the old Spark
-    # expression bit-for-bit: same IEEE op order on doubles, and
-    # _round6 reproduces F.round's BigDecimal.valueOf HALF_UP
-    # (Python's repr and Java's Double.toString emit the same
-    # shortest round-trip decimal) — the SQL twins are unchanged and
-    # still hash-match.
-    spark = cand.sparkSession
+    # rel rows ride the pair relation under a marker column (NOT a
+    # NULL __ib — a NULL in an int64 column would force pandas to
+    # float64 and corrupt large ids)
+    rel_rows = cand.select(
+        "query_id",
+        F.col("vec_id").alias("__ia"),
+        F.col("vec_id").alias("__ib"),
+        F.col("rel").alias("__s"),
+        F.lit(True).alias("__isrel"),
+    )
     # id types come from the candidate relation itself — the operator
-    # is generic over id types (string doc ids, int vec ids), so the
-    # picks relation must round-trip them losslessly
+    # is generic over id types (string doc ids, int vec ids)
     _ctypes = dict(cand.dtypes)
     sel_schema = (
         f"query_id {_ctypes['query_id']}, vec_id {_ctypes['vec_id']}, "
         "rel double, mmr double, rk int"
     )
-    if distributed is None:
-        # bounded 1-row agg on the staged pool relation (materializes
-        # the cache the collects below reuse)
-        distributed = (
-            cand.select("query_id").distinct().count()
-            >= distributed_min_queries
-        )
-    if distributed:
-        # Grouped-map path: rel rows ride the pair relation under a
-        # marker column (NOT a NULL __ib — a NULL in an int64 column
-        # would force pandas to float64 and corrupt large ids), one
-        # group per query, the identical greedy per group.
-        rel_rows = cand.select(
-            "query_id",
-            F.col("vec_id").alias("__ia"),
-            F.col("vec_id").alias("__ib"),
-            F.col("rel").alias("__s"),
-            F.lit(True).alias("__isrel"),
-        )
-        u = pair.withColumn("__isrel", F.lit(False)).unionByName(rel_rows)
 
-        def _greedy_group(pdf):
-            import pandas as pd
+    def _greedy_group(pdf):
+        import pandas as pd
 
-            q = pdf["query_id"].iloc[0]
-            pool: dict = {}
-            sims: dict = {}
-            for ia, ib, s, isrel in zip(
-                pdf["__ia"], pdf["__ib"], pdf["__s"], pdf["__isrel"]
-            ):
-                s = float(s)  # numpy float64 repr() breaks _round6
-                if isrel:
-                    if ia not in pool or s > pool[ia]:
-                        pool[ia] = s
-                else:
-                    sims[(ia, ib)] = s
-            picks = _mmr_greedy_pool(
-                pool, lambda a, b: sims[(a, b)], k, lam
-            )
-            return pd.DataFrame(
-                {
-                    "query_id": [q] * len(picks),
-                    "vec_id": [p[0] for p in picks],
-                    "rel": [p[1] for p in picks],
-                    "mmr": [p[2] for p in picks],
-                    "rk": [p[3] for p in picks],
-                }
-            )
+        q = pdf["query_id"].iloc[0]
+        # Duplicate (query_id, id) candidate rows keep the MAX rel:
+        # the greedy respects rel ORDER, and a duplicated candidate's
+        # best claim is its best score (row order within a group is
+        # not deterministic, so last-wins would be).
+        pool: dict = {}
+        sims: dict = {}
+        for ia, ib, s, isrel in zip(
+            pdf["__ia"], pdf["__ib"], pdf["__s"], pdf["__isrel"]
+        ):
+            s = float(s)  # numpy float64 repr() breaks _round6
+            if isrel:
+                if ia not in pool or s > pool[ia]:
+                    pool[ia] = s
+            else:
+                sims[(ia, ib)] = s
+        picks = _mmr_greedy_pool(pool, lambda a, b: sims[(a, b)], k, lam)
+        return pd.DataFrame(
+            {
+                "query_id": [q] * len(picks),
+                "vec_id": [p[0] for p in picks],
+                "rel": [p[1] for p in picks],
+                "mmr": [p[2] for p in picks],
+                "rk": [p[3] for p in picks],
+            }
+        )
 
-        return (
-            u.groupBy("query_id")
-            .applyInPandas(_greedy_group, schema=sel_schema)
-            .orderBy("query_id", "rk")
-        )
-    cand_rows = cand.select("query_id", "vec_id", "rel").collect()
-    sims: dict = {}
-    for r in pair.collect():
-        sims[(r["query_id"], r["__ia"], r["__ib"])] = r["__s"]
-    # Duplicate (query_id, id) candidate rows keep the MAX rel (r11
-    # advice): dict(pool) would keep whichever rel arrived last in
-    # collect order — nondeterministic — where the pre-r11 window
-    # path ranked duplicates deterministically.  Max is the natural
-    # resolution (the greedy respects rel ORDER, and a duplicated
-    # candidate's best claim is its best score).
-    by_query: dict = {}
-    for r in cand_rows:
-        m = by_query.setdefault(r["query_id"], {})
-        i, rl = r["vec_id"], r["rel"]
-        if i not in m or rl > m[i]:
-            m[i] = rl
-    picks = []
-    for q in sorted(by_query):
-        picks.extend(
-            (q, i, rl, mmr, rk)
-            for i, rl, mmr, rk in _mmr_greedy_pool(
-                by_query[q], lambda a, b, _q=q: sims[(_q, a, b)], k, lam
-            )
-        )
-    return spark.createDataFrame(picks, sel_schema).orderBy("query_id", "rk")
+    return (
+        pair.unionByName(rel_rows)
+        .groupBy("query_id")
+        .applyInPandas(_greedy_group, schema=sel_schema)
+        .orderBy("query_id", "rk")
+    )
 
 
 def mmr_greedy_sql(rel_select: str, k: int, lam: float, pre_ctes: str = "") -> str:
@@ -754,8 +695,8 @@ def derive_n_planes(n_rows: int) -> int:
     return max(4, min(24, raw))
 
 
-def _band_planes(n_bands: int, n_planes: int) -> list[list[list[float]]]:
-    need = n_bands * n_planes
+def _band_planes(n_planes: int) -> list[list[list[float]]]:
+    need = N_BANDS * n_planes
     # Hard error, not assert: under ``python -O`` an assert is
     # stripped and the out-of-range pool slices would return
     # short/empty plane lists — every vector then hashes to one
@@ -764,16 +705,16 @@ def _band_planes(n_bands: int, n_planes: int) -> list[list[list[float]]]:
     if need > len(PLANE_POOL):
         raise ValueError(
             f"frozen plane pool ({len(PLANE_POOL)}) too small for "
-            f"{n_bands} bands x {n_planes} planes; extend PLANE_POOL "
-            "(and its SQL twin constants) or lower n_bands/max_planes"
+            f"{N_BANDS} bands x {n_planes} planes; extend PLANE_POOL "
+            "(and its SQL twin constants) or lower N_BANDS/max_planes"
         )
     return [
-        PLANE_POOL[b * n_planes : (b + 1) * n_planes] for b in range(n_bands)
+        PLANE_POOL[b * n_planes : (b + 1) * n_planes] for b in range(N_BANDS)
     ]
 
 
 def _band_side(
-    df: DataFrame, id_col: str, vec_col: str, bands: list
+    df: DataFrame, bands: list
 ) -> tuple[DataFrame, DataFrame]:
     """One side of a banded sign-LSH join: the staged ``(__id, __v,
     __n)`` vectors and their ``(__id, __band, __bucket)`` keys.
@@ -786,10 +727,10 @@ def _band_side(
     and the candidate set is ~bands·buckets·pop² pairs, so paying 3
     HOF passes per pair instead of 1 tripled the verify cost
     (bitwise-identical result — same norm expression, computed once)."""
-    vcast = F.col(vec_col).cast("array<double>")
+    vcast = F.col("embedding").cast("array<double>")
     base = stage(
         df.select(
-            F.col(id_col).alias("__id"),
+            F.col("vec_id").alias("__id"),
             vcast.alias("__v"),
             norm(vcast).alias("__n"),
         )
@@ -853,8 +794,8 @@ def cosine_near_dup_pairs(
     embeddings = embeddings.filter(finite_vec("embedding"))
     if n_planes is None:
         n_planes = derive_n_planes(embeddings.count())
-    bands = _band_planes(N_BANDS, n_planes)
-    base, keys = _band_side(embeddings, "vec_id", "embedding", bands)
+    bands = _band_planes(n_planes)
+    base, keys = _band_side(embeddings, bands)
     # Candidate pairs are NOT pre-deduped across bands: deduping first
     # costs a full shuffle of the (large) candidate set, while a pair
     # sharing k>1 bands merely re-verifies k times — and only genuinely
@@ -904,9 +845,9 @@ def cosine_dedup_delta(
         n_planes = derive_n_planes(
             corpus.count() + delta_ok.count()
         )
-    bands = _band_planes(N_BANDS, n_planes)
-    base_c, keys_c = _band_side(corpus, "vec_id", "embedding", bands)
-    base_d, keys_d = _band_side(delta_ok, "vec_id", "embedding", bands)
+    bands = _band_planes(n_planes)
+    base_c, keys_c = _band_side(corpus, bands)
+    base_d, keys_d = _band_side(delta_ok, bands)
     # R-S candidates: delta keys × corpus keys within a (band, bucket)
     # — duplicate band collisions re-verify rather than pre-dedup (the
     # cosine_near_dup_pairs rationale); the distinct runs on matched
@@ -933,7 +874,7 @@ def cosine_near_dup_sql() -> str:
     pool, same band partitioning, same bucket arithmetic).  The twin
     pins an explicit ``n_planes`` — the Spark side's corpus-derived
     default is a runtime scalar the static SQL can't know."""
-    bands = _band_planes(N_BANDS, 4)
+    bands = _band_planes(4)
     bucket_list = "[" + ", ".join(
         sign_bucket_sql("embedding", planes) for planes in bands
     ) + "]"
@@ -1325,7 +1266,6 @@ def train_pq_codebooks(
     m: int = 4,
     k: int = 16,
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Product-quantization codebooks: split each vector into ``m``
     contiguous sub-vectors and fit an independent ``k``-centroid
@@ -1377,22 +1317,22 @@ def train_pq_codebooks(
     rows = []
     for j in range(m):
         X = np.ascontiguousarray(X_full[:, j * sub : (j + 1) * sub])
-        C = _lloyd(X, k, seed=seed + j, max_iter=10)
+        C = _lloyd(X, k, seed=42 + j)
         rows += [
             (j, c, [float(x) for x in cent]) for c, cent in enumerate(C)
         ]
     return spark.createDataFrame(rows, "subspace int, code int, __c array<double>")
 
 
-def _lloyd(X, k: int, seed: int, max_iter: int):
+def _lloyd(X, k: int, seed: int):
     """Vectorized driver-side Lloyd iterations on a bounded sample.
 
     Init is UNIQUE-FIRST and deterministic: distinct points seed the
     centroids before any repeats, so a corpus with ≤ k distinct
     sub-vectors converges to an exact codebook (random init can seed
     duplicate points and strand a distinct value — the pyspark.ml
-    kmeans|| behavior this replaces avoided that too).  Empty clusters
-    keep their previous centroid."""
+    kmeans|| behavior this replaces avoided that too).  Ten iterations;
+    empty clusters keep their previous centroid."""
     import numpy as np
 
     uniq = np.unique(X, axis=0)
@@ -1404,7 +1344,7 @@ def _lloyd(X, k: int, seed: int, max_iter: int):
         reps = -(-k // len(uniq))  # ceil
         C = np.tile(uniq, (reps, 1))[:k]
     x2 = (X * X).sum(axis=1)
-    for _ in range(max_iter):
+    for _ in range(10):
         d = x2[:, None] - 2.0 * (X @ C.T) + (C * C).sum(axis=1)[None, :]
         assign = d.argmin(axis=1)
         newC = C.copy()
@@ -1559,8 +1499,7 @@ def top_k_ann_ivfpq(
     recall@k vs :func:`top_k_bruteforce` is pinned by unit tests.
     """
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, m, k_codes, "vec_id", "embedding",
-        "query_id", "query_vec", centroids, codebooks, 42,
+        embeddings, queries, n_cells, n_probe, m, k_codes, centroids, codebooks
     )
     return _adc_rank_joined(cand, corpus, k, rerank, "vec_id", "query_id")
 
@@ -1572,13 +1511,8 @@ def _ivfpq_in_memory(
     n_probe: int,
     m: int,
     k_codes: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    query_vec_col: str,
     centroids: DataFrame | None,
     codebooks: DataFrame | None,
-    seed: int,
 ) -> tuple[DataFrame, DataFrame]:
     """The in-memory IVF-PQ index both :func:`top_k_ann_ivfpq` and
     :func:`top_k_ann_ivfpq_multirerank` search: returns the staged
@@ -1586,9 +1520,9 @@ def _ivfpq_in_memory(
     code×probe join the ADC epilogue scores."""
     # Staged: the corpus projection has two consumers (PQ encode, exact
     # re-rank by id); the registry releases it after materialization.
-    corpus = stage(_vector_corpus(embeddings, id_col, vec_col))
-    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
+    corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
+    cent_rows = _coarse_rows(corpus, "vec_id", n_cells, centroids)
+    assigned = _assign_cells_literal(corpus, cent_rows, "vec_id")
     # Residual frame: v − centroid(cell) (:func:`_residual_frame` —
     # one literal array-of-arrays lookup, no join).  STAGED: its
     # consumers are the codebook trainer's sample collect plus the
@@ -1597,11 +1531,9 @@ def _ivfpq_in_memory(
     # F.expr SQL strings (Column-by-Column construction paid ~10k
     # Py4J round-trips and dominated the query's wall clock at any
     # scale).
-    resid = stage(_residual_frame(assigned, cent_rows, id_col))
+    resid = stage(_residual_frame(assigned, cent_rows, "vec_id"))
     if codebooks is None:
-        codebooks = train_pq_codebooks(
-            resid, m=m, k=k_codes, vec_col="__r", seed=seed
-        )
+        codebooks = train_pq_codebooks(resid, m=m, k=k_codes, vec_col="__r")
     # eager fills (r15 opt): with PRE-TRAINED centroids/codebooks (the
     # recall-profile sweep) no trainer collect runs, so these staged
     # relations would fill lazily inside the final query, whose encode
@@ -1612,13 +1544,13 @@ def _ivfpq_in_memory(
     resid.count()
     by_sub = _collect_codebooks(codebooks)
     encoded = resid.select(
-        id_col,
+        "vec_id",
         "cell_id",
         "__n",
         _pq_codes_expr("__r", by_sub).alias("__codes"),
     )
     probes = _adc_probes(
-        queries, cent_rows, by_sub, n_probe, query_id_col, query_vec_col
+        queries, cent_rows, by_sub, n_probe, "query_id", "query_vec"
     )
     return corpus, encoded.join(F.broadcast(probes), on="cell_id")
 
@@ -1742,8 +1674,7 @@ def top_k_ann_ivfpq_multirerank(
     :func:`top_k_ann_ivfpq` call's (same ADC table, same cosine, same
     final tie-break).  Returns ``[(r, top_k_frame), ...]``."""
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, 4, k_codes, "vec_id", "embedding",
-        "query_id", "query_vec", centroids, codebooks, 42,
+        embeddings, queries, n_cells, n_probe, 4, k_codes, centroids, codebooks
     )
     # _adc_rank_joined's epilogue at the widest cut, keeping __crk
     candidates = _adc_candidates(
@@ -2458,8 +2389,6 @@ def _search(
     n_probe: int,
     rerank: int,
     id_col: str,
-    query_id_col: str,
-    query_vec_col: str,
 ) -> DataFrame:
     """The one search body behind all four searchers: a probe ladder
     over ONE ranked probe frame at the WIDEST rung (*Incremental …
@@ -2491,9 +2420,9 @@ def _search(
     stored = spark.read.parquet(f"{path}/{codec.rel}")
     if where is not None:
         stored = stored.filter(F.expr(where))
-    rank = codec.ranker(spark, path, k, rerank, id_col, query_id_col)
+    rank = codec.ranker(spark, path, k, rerank, id_col, "query_id")
     probes_all = codec.probes(
-        queries, params, ladder[-1], query_id_col, query_vec_col, "__pr"
+        queries, params, ladder[-1], "query_id", "query_vec", "__pr"
     )
 
     def candidates(cells: list, probes: DataFrame) -> DataFrame:
@@ -2506,9 +2435,9 @@ def _search(
             F.array_sort(F.collect_set("cell_id"))
         ).first()[0]
         return rank(candidates(cells, probes_all))
-    probes_all = probes_all.filter(F.col(query_id_col).isNotNull())
-    probe_rows = probes_all.select(query_id_col, "cell_id", "__pr").collect()
-    pending = {r[query_id_col] for r in probe_rows}
+    probes_all = probes_all.filter(F.col("query_id").isNotNull())
+    probe_rows = probes_all.select("query_id", "cell_id", "__pr").collect()
+    pending = {r["query_id"] for r in probe_rows}
     todo = probes_all
     parts: list[DataFrame] = []
     for p in ladder:
@@ -2516,7 +2445,7 @@ def _search(
             {
                 r["cell_id"]
                 for r in probe_rows
-                if r[query_id_col] in pending and r["__pr"] <= p
+                if r["query_id"] in pending and r["__pr"] <= p
             }
         )
         cand = candidates(cells, todo.filter(F.col("__pr") <= p))
@@ -2525,18 +2454,18 @@ def _search(
             break
         cand = stage(cand)
         counts = {
-            r[query_id_col]: r["__nc"]
-            for r in cand.groupBy(query_id_col)
+            r["query_id"]: r["__nc"]
+            for r in cand.groupBy("query_id")
             .agg(F.count(F.lit(1)).alias("__nc"))
             .collect()
         }
         done = {q for q in pending if counts.get(q, 0) >= k}
         if done:
-            parts.append(rank(cand.filter(F.col(query_id_col).isin(*done))))
+            parts.append(rank(cand.filter(F.col("query_id").isin(*done))))
         pending -= done
         if not pending:
             break
-        todo = probes_all.filter(F.col(query_id_col).isin(*pending))
+        todo = probes_all.filter(F.col("query_id").isin(*pending))
     return reduce(DataFrame.unionByName, parts)
 
 
@@ -2559,8 +2488,7 @@ def search_ivf_index(
     results are identical to the non-persisted operator (and to its
     SQL oracle twin)."""
     return _search(
-        _RAW, spark, path, queries, params, None, k, n_probe, 0,
-        id_col, "query_id", "query_vec",
+        _RAW, spark, path, queries, params, None, k, n_probe, 0, id_col
     )
 
 
@@ -2599,8 +2527,7 @@ def search_ivf_index_filtered(
     widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
     """
     return _search(
-        _RAW, spark, path, queries, params, where, k, n_probe, 0,
-        id_col, "query_id", "query_vec",
+        _RAW, spark, path, queries, params, where, k, n_probe, 0, id_col
     )
 
 
@@ -2626,8 +2553,7 @@ def search_ivfpq_index(
     (pinned in tests/test_ivfpq_index.py) — the persistence
     round-trip is lossless."""
     return _search(
-        _PQ, spark, path, queries, params, None, k, n_probe, rerank,
-        id_col, "query_id", "query_vec",
+        _PQ, spark, path, queries, params, None, k, n_probe, rerank, id_col
     )
 
 
@@ -2669,6 +2595,5 @@ def search_ivfpq_index_filtered(
     bounded ≤|Q|-row collect off the staged code×probe join (shared
     with the ranking — the join is staged once per rung)."""
     return _search(
-        _PQ, spark, path, queries, params, where, k, n_probe, rerank,
-        id_col, "query_id", "query_vec",
+        _PQ, spark, path, queries, params, where, k, n_probe, rerank, id_col
     )

@@ -341,18 +341,16 @@ def pct_share_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ntile_distributed(
-    rel: DataFrame, order_cols, k: int, key: str, out_name: str
-) -> DataFrame:
-    """Exact ``ntile(k)`` over a GLOBAL unique ordering without the
+def _ntile_distributed(rel: DataFrame, order_cols, key: str, out_name: str) -> DataFrame:
+    """Exact ``ntile(5)`` over a GLOBAL unique ordering without the
     global single-task window sort (the r11 lint finding on the r9
     RFM shape): range-repartition on the ordering, per-range-partition
     ``row_number``, level-2 exclusive offsets over the ≤
     shuffle-partitions subtotal rows (the pack_bins/ks two-level
     pattern — the only global window left is over the bounded
     subtotal relation), then Spark's exact ntile bucket sizes
-    reproduced arithmetically from (rank, n): the first ``n % k``
-    buckets hold ``ceil(n/k)`` rows, the rest ``floor(n/k)``.
+    reproduced arithmetically from (rank, n): the first ``n % 5``
+    buckets hold ``ceil(n/5)`` rows, the rest ``floor(n/5)``.
 
     Rank is boundary-independent (offset + local row number is the
     same total order wherever the range partitioner cuts), so the
@@ -382,13 +380,13 @@ def _ntile_distributed(
     tot = sub.agg(F.sum("__c").alias("__n"))
     rk = F.col("__off") + F.col("__lr")
     n = F.col("__n")
-    q = F.floor(n / k)  # small-bucket size
-    rr = n % k  # number of big (q+1) buckets
+    q = F.floor(n / 5)  # small-bucket size
+    rr = n % 5  # number of big (q+1) buckets
     big_span = rr * (q + 1)
     bucket = F.when(
         rk <= big_span, F.floor((rk - 1) / (q + 1)) + 1
     ).otherwise(
-        # greatest() guards the n < k case (q = 0): that branch is
+        # greatest() guards the n < 5 case (q = 0): that branch is
         # unreachable there (every rank <= big_span) but must not
         # divide by zero under ANSI evaluation
         rr + F.floor((rk - big_span - 1) / F.greatest(q, F.lit(1))) + 1
@@ -437,21 +435,18 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ntile_distributed(
             per_cust,
             [F.desc("last_order"), F.asc("o_custkey")],
-            5,
             "o_custkey",
             "r_score",
         ),
         _ntile_distributed(
             per_cust,
             [F.desc("frequency"), F.asc("o_custkey")],
-            5,
             "o_custkey",
             "f_score",
         ),
         _ntile_distributed(
             per_cust,
             [F.desc("monetary"), F.asc("o_custkey")],
-            5,
             "o_custkey",
             "m_score",
         ),

@@ -228,29 +228,6 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ldd.ngram_jaccard_pairs(docs, threshold=0.3)
 
 
-def doc_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PPJoin prefix-filtered exact Jaccard pairs
-    (llm/dedup.py::ngram_jaccard_pairs_prefix): identical result to
-    doc_ngram_jaccard — the twin IS ngram_jaccard_sql — with candidate
-    generation bounded by rarest-first prefixes instead of whole
-    posting lists."""
-    docs = load_table(spark, sf_dir, "documents")
-    return ldd.ngram_jaccard_pairs_prefix(docs, threshold=0.3)
-
-
-def doc_ngram_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regime-selected exact Jaccard pairs
-    (llm/dedup.py::ngram_jaccard_pairs_auto): tokenize once, run the
-    one-pass candidate-volume profile, dispatch to the PPJoin prefix
-    plan only when it predicts a >= 2x candidate cut (on the bench
-    documents at t=0.3 the profile predicts ~1.5x, so this entry
-    exercises the base-plan arm — the favorable arm is pinned in
-    tests/test_prefix_jaccard.py).  Identical result either way; the
-    twin IS ngram_jaccard_sql."""
-    docs = load_table(spark, sf_dir, "documents")
-    return ldd.ngram_jaccard_pairs_auto(docs, threshold=0.3)
-
-
 def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training order (llm/sampling.py::corpus_shuffle):
     seeded md5-rank permutation + round-robin shard assignment via the
@@ -1442,7 +1419,7 @@ def vec_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent): the default derives planes from the corpus+delta
     count at runtime, so past ``target_bucket_size`` rows the engine
     would silently widen its band keys while the DuckDB twin stays at
-    ``_band_planes(3, 4)`` and the hash would diverge with scale
+    ``_band_planes(4)`` and the hash would diverge with scale
     factor."""
     emb = _load_embeddings(spark, sf_dir)
     corpus = emb.where(F.col("vec_id") < _VEC_DELTA_SPLIT)
@@ -1451,27 +1428,6 @@ def vec_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         lvec.cosine_dedup_delta(corpus, delta, n_planes=4)
         .select("vec_id", "label")
         .orderBy("vec_id")
-    )
-
-
-def vec_mmr_rerank_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTRIBUTED MMR greedy (r12, the r11 verdict's #6): the
-    identical query set and dials as ``vec_mmr_rerank`` but forced
-    down the Arrow-batched ``applyInPandas`` grouped-map path — one
-    group per query_id, driver state O(1) — the shape a large query
-    batch (|Q| in the thousands) runs, where collecting |Q|·pool²
-    similarity rows to the driver stops being bounded.  Both paths
-    execute the same :func:`llm.vectors._mmr_greedy_pool` arithmetic,
-    so this entry SHARES vec_mmr_rerank's DuckDB twin — the driver
-    hash proves the dispatch is semantically invisible."""
-    emb = _load_embeddings(spark, sf_dir)
-    return lvec.mmr_rerank(
-        emb,
-        _query_set(emb),
-        k=_MMR_K,
-        pool=_MMR_POOL,
-        lam=_MMR_LAMBDA,
-        distributed=True,
     )
 
 
@@ -2261,19 +2217,17 @@ _IVF_TOP_K_SQL = _IVF_TOP_K_TEMPLATE.format(
 )
 
 
-def _ivf_filtered_sql(
-    pred: str, k: int, cells: int, n_probe: int, qpred: str
-) -> str:
+def _ivf_filtered_sql(n_probe: int, qpred: str) -> str:
     """DuckDB twin of llm.vectors.search_ivf_index_filtered: same
     seeded centroids and cell assignment as the IVF twin, the corpus
-    pre-filtered by ``pred``, and each query's effective probe count
-    derived from the SAME widening ladder — the first rung whose
-    top-p cells hold ≥ k filtered vectors, else the final
+    pre-filtered by ``_FILTERED_ANN_PRED``, and each query's effective
+    probe count derived from the SAME widening ladder — the first rung
+    whose top-p cells hold ≥ ``_TOP_K`` filtered vectors, else the final
     probe-everything rung (expressed as a first-match CASE over
     cumulative per-cell-rank counts)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import probe_ladder
 
-    ladder = probe_ladder(n_probe, cells)
+    ladder = probe_ladder(n_probe, _IVF_CELLS)
     if len(ladder) == 1:
         # n_probe >= n_cells: one probe-everything rung.  A CASE with
         # zero WHEN clauses (`CASE ELSE n END`) is a syntax error, so
@@ -2284,7 +2238,7 @@ def _ivf_filtered_sql(
             "CASE "
             + " ".join(
                 f"WHEN sum(CASE WHEN crk <= {p} THEN cnt ELSE 0 END) "
-                f">= {k} THEN {p}"
+                f">= {_TOP_K} THEN {p}"
                 for p in ladder[:-1]
             )
             + f" ELSE {ladder[-1]} END"
@@ -2294,7 +2248,7 @@ WITH cents AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell_id,
          CAST(embedding AS DOUBLE[]) AS cv
   FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT {cells})
+        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT {_IVF_CELLS})
 ), c AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   WHERE {VEC_OK_SQL}
@@ -2304,7 +2258,7 @@ WITH cents AS (
   QUALIFY row_number() OVER (PARTITION BY c.vec_id
       ORDER BY list_cosine_similarity(c.v, cents.cv) DESC, cents.cell_id) = 1
 ), cand AS (
-  SELECT * FROM assigned WHERE {pred}
+  SELECT * FROM assigned WHERE {_FILTERED_ANN_PRED}
 ), q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
   FROM embeddings WHERE {qpred} AND {VEC_OK_SQL}
@@ -2332,7 +2286,7 @@ WITH cents AS (
   JOIN eff e ON e.query_id = qc.query_id AND qc.crk <= e.eff_p
 )
 SELECT query_id, vec_id, round(cos, 6) AS cos_sim, CAST(rk AS INTEGER) AS rk
-FROM scored WHERE rk <= {k} ORDER BY query_id, rk
+FROM scored WHERE rk <= {_TOP_K} ORDER BY query_id, rk
 """
 
 _COS_CENTROID_SQL = f"""
@@ -2632,11 +2586,6 @@ ORDER BY s.split
         )
         + " ORDER BY id_l, id_r"
     ),
-    # prefix filtering is candidate-pruning only — the oracle is the
-    # SAME SQL as the unfiltered join (transparency proved by hash);
-    # ditto the regime dispatcher, whichever plan it picks
-    "doc_ngram_jaccard_prefix": ldd.ngram_jaccard_sql(threshold=0.3),
-    "doc_ngram_jaccard_auto": ldd.ngram_jaccard_sql(threshold=0.3),
     # doc_near_dup_minhash_ml: intentionally absent (rows-only check).
     "doc_near_dup_removal": (
         "SELECT d.* FROM documents d WHERE NOT EXISTS ("
@@ -2875,7 +2824,7 @@ ORDER BY s.split
     "vec_dedup_delta": f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         [{", ".join(lvec.sign_bucket_sql("embedding", planes) for planes in lvec._band_planes(3, 4))}] AS bk
+         [{", ".join(lvec.sign_bucket_sql("embedding", planes) for planes in lvec._band_planes(4))}] AS bk
   FROM embeddings WHERE {VEC_OK_SQL}
 ), k AS (
   SELECT vec_id, unnest(range(3)) AS band, unnest(bk) AS bucket FROM e
@@ -2947,11 +2896,7 @@ ORDER BY emb.vec_id
     # filtered-ANN twin: the widening ladder is part of the semantics,
     # derived from the SAME probe_ladder rungs as the engine
     "vec_filtered_ann": _ivf_filtered_sql(
-        _FILTERED_ANN_PRED,
-        k=_TOP_K,
-        cells=_IVF_CELLS,
-        n_probe=_IVF_PROBE,
-        qpred=f"vec_id < {_N_QUERIES}",
+        n_probe=_IVF_PROBE, qpred=f"vec_id < {_N_QUERIES}"
     ),
     # the persisted-index search shares seeds/dials with the in-memory
     # operator, so the same twin proves the round-trip lossless
@@ -2974,12 +2919,6 @@ ORDER BY emb.vec_id
         _BM25_QUERY, k=10, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M
     ),
     "vec_mmr_rerank": lvec.mmr_rerank_sql(
-        k=_MMR_K, pool=_MMR_POOL, lam=_MMR_LAMBDA, n_queries=_N_QUERIES
-    ),
-    # the distributed grouped-map dispatch runs the same greedy
-    # arithmetic, so it shares the same twin — the hash proves the
-    # dispatch invisible
-    "vec_mmr_rerank_batch": lvec.mmr_rerank_sql(
         k=_MMR_K, pool=_MMR_POOL, lam=_MMR_LAMBDA, n_queries=_N_QUERIES
     ),
     # serving composition: the IVF leg is the SAME template as

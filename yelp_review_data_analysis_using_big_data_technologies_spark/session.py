@@ -18,6 +18,15 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "yelp_review_analytics_spark"
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 16g, or
+    half the host's physical memory when that is smaller.  A long-lived
+    session (one JVM per test session) grows toward its cap, so a cap
+    above the host hands the process to the OOM killer."""
+    phys_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, phys_mib // 2)}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -69,7 +78,10 @@ def get_spark(
         # read as long and normalize in the loader (readers.load_table).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -171,26 +171,25 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
 
-def _normalize_ns_timestamps(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
-    """Parquet TIMESTAMP(NANOS) has no Spark type; with
+def _normalize_ns_timestamps(df: DataFrame) -> DataFrame:
+    """``events.ts`` is Parquet TIMESTAMP(NANOS), which has no Spark type; with
     ``spark.sql.legacy.parquet.nanosAsLong`` it lands as long nanos.
     Truncate to micros (matching DuckDB's python-side behavior) and
     restore TimestampType so window/date functions work."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    for c in cols:
-        if c in df.columns and isinstance(df.schema[c].dataType, T.LongType):
-            # Integer division keeps the arithmetic in long: `/` would
-            # promote ~1.8e18 nanos past double's 2^53 exact range and
-            # drift the truncated micros by ±1us vs DuckDB.
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    if "ts" in df.columns and isinstance(df.schema["ts"].dataType, T.LongType):
+        # Integer division keeps the arithmetic in long: `/` would
+        # promote ~1.8e18 nanos past double's 2^53 exact range and
+        # drift the truncated micros by ±1us vs DuckDB.
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("`ts` div 1000")))
     return df
 
 
 #: Per-table fixups applied by load_table.
 _TABLE_NORMALIZERS = {
-    "events": lambda df: _normalize_ns_timestamps(df, ("ts",)),
+    "events": _normalize_ns_timestamps,
 }
 
 

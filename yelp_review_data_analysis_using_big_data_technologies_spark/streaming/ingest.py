@@ -92,16 +92,9 @@ def read_before(
     return df
 
 
-def _delta_features(
-    delta: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-) -> DataFrame:
+def _delta_features(delta: DataFrame) -> DataFrame:
     """Per-doc dedup features for an ingest batch — the rows the
-    band-key INDEX stores: ``(id, __sha, __sz, __sh, __bands)``.
+    band-key INDEX stores: ``(doc_id, __sha, __sz, __sh, __bands)``.
     Built from the SAME shared builders as ``llm.dedup._banded_keys``
     (``band_key_array`` for the bucket keys, the staged distinct
     shingles + salted-md5 MinHash), except empty-shingle docs are KEPT
@@ -109,11 +102,11 @@ def _delta_features(
     ``__bands`` array (they still need their exact-hash row in the
     index; an empty array explodes to no band keys, preserving the
     no-quadratic-NULL-collision guarantee)."""
-    src = spread(delta.select(F.col(id_col), F.col(text_col)))
+    src = spread(delta.select(F.col("doc_id"), F.col("text")))
     base = (
-        shingled(src, [id_col], text_col, shingle_n, out="__sh0")
+        shingled(src, ["doc_id"], "text", SHINGLE_N, out="__sh0")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.array_distinct(F.col("__sh0")).alias("__sh"),
         )
         .withColumn("__sz", F.size("__sh"))
@@ -121,21 +114,21 @@ def _delta_features(
             "__sig",
             F.when(
                 F.col("__sz") > 0,
-                minhash_signature_from(F.col("__sh"), num_hashes),
+                minhash_signature_from(F.col("__sh"), NUM_HASHES),
             ),
         )
     )
     sha = delta.select(
-        F.col(id_col), F.sha2(F.col(text_col), 256).alias("__sha")
+        F.col("doc_id"), F.sha2(F.col("text"), 256).alias("__sha")
     )
-    feats = base.join(sha, on=id_col).select(
-        id_col,
+    feats = base.join(sha, on="doc_id").select(
+        "doc_id",
         "__sha",
         "__sz",
         "__sh",
         F.when(
             F.col("__sz") > 0,
-            band_key_array(F.col("__sig"), num_hashes, bands),
+            band_key_array(F.col("__sig"), NUM_HASHES, BANDS),
         )
         .otherwise(F.array().cast("array<string>"))
         .alias("__bands"),
@@ -143,14 +136,14 @@ def _delta_features(
     return stage(feats)
 
 
-def _band_sides(feats: DataFrame, id_col: str) -> tuple[DataFrame, DataFrame]:
+def _band_sides(feats: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The ``(base, keys)`` pair :func:`llm.dedup.verified_pairs_from`
     and :func:`llm.dedup.match_banded_candidates` take, cut from a
     :func:`_delta_features` relation (batch or index): ``(__id, __sh,
     __sz)`` and one ``(__id, band_key)`` row per band key."""
-    base = feats.select(F.col(id_col).alias("__id"), "__sh", "__sz")
+    base = feats.select(F.col("doc_id").alias("__id"), "__sh", "__sz")
     keys = feats.select(
-        F.col(id_col).alias("__id"), F.explode("__bands").alias("band_key")
+        F.col("doc_id").alias("__id"), F.explode("__bands").alias("band_key")
     )
     return base, keys
 
@@ -308,9 +301,7 @@ def stream_doc_dedup_to_parquet(
     """
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        feats = _delta_features(
-            batch_df, "doc_id", "text", NUM_HASHES, BANDS, SHINGLE_N
-        )
+        feats = _delta_features(batch_df)
         # intra-batch exact keep-first (NULL sha exempt: rn pinned 1)
         w = Window.partitionBy("__sha").orderBy("doc_id")
         exact_first = (
@@ -324,7 +315,7 @@ def stream_doc_dedup_to_parquet(
             .select("doc_id")
         )
         # intra-batch near keep-first: drop id_b of every verified pair
-        base, keys = _band_sides(feats, "doc_id")
+        base, keys = _band_sides(feats)
         intra_dropped = verified_pairs_from(base, keys, THRESHOLD).select(
             F.col("id_b").alias("doc_id")
         )
@@ -344,7 +335,7 @@ def stream_doc_dedup_to_parquet(
                 .select("doc_id")
             )
             # cross near: shared predicate builder with the batch path
-            cbase, ckeys = _band_sides(index, "doc_id")
+            cbase, ckeys = _band_sides(index)
             matched = match_banded_candidates(
                 base, keys, cbase, ckeys, "doc_id", THRESHOLD
             )
