@@ -718,7 +718,7 @@ def _q_events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ref, cur = _drift_sides(spark, sf_dir)
-    frozen = psi_freeze_reference(ref, buckets=10)
+    frozen = psi_freeze_reference(ref)
     return psi_profile_frozen(cur, frozen)
 
 
@@ -991,7 +991,7 @@ def _q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import sessionize
 
     events = load_table(spark, sf_dir, "events")
-    return sessionize(events, gap="30 minutes")
+    return sessionize(events)
 
 
 def _q_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1142,9 +1142,7 @@ def _q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts"
     )
     sessions = (
-        sessionize(
-            events.filter(F.col("event_type") == "click"), gap="30 minutes"
-        )
+        sessionize(events.filter(F.col("event_type") == "click"))
         .select("user_id", "session_start", "last_ts")
         .withColumn(
             "win_start", F.col("session_start") - F.expr("INTERVAL 30 MINUTES")
@@ -1171,7 +1169,7 @@ def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "c_custkey"
     )
     customer = load_table(spark, sf_dir, "customer")
-    j = salted_join(orders, customer, on="c_custkey", buckets=8)
+    j = salted_join(orders, customer, on="c_custkey")
     return (
         j.groupBy("c_mktsegment")
         .agg(
@@ -1194,7 +1192,7 @@ def _q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     agg = tumbling_counts(stream_events(spark, sf_dir))
-    return run_available_now(agg, "stream_tumbling_sink", "complete")
+    return run_available_now(agg, "stream_tumbling_sink")
 
 
 def _q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,7 +1209,7 @@ def _q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = stream_events(spark, sf_dir).filter(_finite_value())
     return run_available_now(
-        tumbling_ohlc(src), "stream_ohlc_sink", "complete"
+        tumbling_ohlc(src), "stream_ohlc_sink"
     )
 
 
@@ -1225,10 +1223,8 @@ def _q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import sliding_counts
 
-    agg = sliding_counts(
-        stream_events(spark, sf_dir), slide="30 minutes"
-    )
-    return run_available_now(agg, "stream_sliding_sink", "complete")
+    agg = sliding_counts(stream_events(spark, sf_dir))
+    return run_available_now(agg, "stream_sliding_sink")
 
 
 def _q_stream_windows_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1314,7 +1310,7 @@ def _q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return run_available_now(
-        agg, "stream_static_enrich_sink", "complete"
+        agg, "stream_static_enrich_sink"
     ).orderBy("c_mktsegment", "event_type")
 
 
@@ -1387,7 +1383,7 @@ def _q_stream_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _index_ingest_entry(
-    spark: SparkSession, sf_dir: str, name: str, ingest, search, **dials
+    spark: SparkSession, sf_dir: str, name: str, ingest, search
 ) -> DataFrame:
     """§2.10 × §2.12 — STREAMING maintenance of a persisted vector
     index, the body both index-ingest entries share: the well-formed
@@ -1408,7 +1404,7 @@ def _index_ingest_entry(
     )
     return search(
         spark, idx, llm_queries._query_set(emb), k=llm_queries._TOP_K,
-        n_probe=llm_queries._IVF_PROBE, params=params, **dials,
+        n_probe=llm_queries._IVF_PROBE, params=params,
     ).orderBy("query_id", "rk")
 
 
@@ -1439,7 +1435,7 @@ def _q_stream_pq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_ivfpq_index.py."""
     return _index_ingest_entry(
         spark, sf_dir, "pq_ingest", stream_pq_index_ingest,
-        lvec.search_ivfpq_index, rerank=4,
+        lvec.search_ivfpq_index,
     )
 
 
@@ -1638,7 +1634,6 @@ def _q_events_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         _side("click", "l"),
         _side("purchase", "r"),
         by="user_id",
-        bucket_seconds=3600,
     )
     return out.select("user_id", "l_id", "r_id", "overlap_seconds").orderBy(
         "user_id", "l_id", "r_id"
@@ -1867,7 +1862,6 @@ def _q_customer_fuzzy_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust,
         id_col="c_custkey",
         key_col="c_name",
-        window=3,
         block_col=F.substring("c_name", 1, 14),
     ).orderBy("id_a", "id_b")
 

@@ -300,7 +300,7 @@ def main(argv=None) -> None:
                 # OUTSIDE the timed window, and the release is blocking:
                 # async unpersist pushes block-removal work into the next
                 # query's measurement (observed 3-4x inflation).
-                release_staging(blocking=True)
+                release_staging()
                 spark.catalog.clearCache()
                 spark.sparkContext._jvm.System.gc()
                 spark.range(1).count()  # settle barrier before next timing

@@ -46,7 +46,7 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=4)
+    s = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "4"})
     yield s
 
 

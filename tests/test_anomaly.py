@@ -11,9 +11,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.anomaly import iqr_outlier_profile
 
 
-def _profile(spark, rows, **kw):
+def _profile(spark, rows):
     df = spark.createDataFrame(rows, "event_type STRING, value DOUBLE")
-    out = iqr_outlier_profile(df, keys=["event_type"], **kw).collect()
+    out = iqr_outlier_profile(df).collect()
     return {r.event_type: r for r in out}
 
 
@@ -96,15 +96,6 @@ def test_equidepth_nonfinite_dropped(spark):
     ]
     df = spark.createDataFrame(rows, "event_type string, value double")
     assert sum(r.n for r in equidepth_histogram(df).collect()) == 8
-
-
-def test_equidepth_validation(spark):
-    import pytest as _pt
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.anomaly import equidepth_histogram
-
-    with _pt.raises(ValueError, match="buckets"):
-        equidepth_histogram(None, buckets=1)
 
 
 def _cp_rows():

@@ -46,29 +46,6 @@ def test_backward_matches_latest_at_or_before(spark):
     assert out["other-user"] == (None, None)  # no right rows for user 2
 
 
-def test_forward_matches_earliest_at_or_after(spark):
-    left, right = _frames(spark)
-    out = {
-        r.tag: (r.asof_ts, r.asof_price)
-        for r in asof_join(left, right, direction="forward").collect()
-    }
-    assert out["a"] == (_ts(10), 200.0)  # tie still matches
-    assert out["b"] == (None, None)  # nothing at or after :20
-    assert out["early"] == (_ts(8), 100.0)
-
-
-def test_tolerance_nulls_stale_matches(spark):
-    left, right = _frames(spark)
-    out = {
-        r.tag: r.asof_price
-        for r in asof_join(
-            left, right, tolerance=F.expr("INTERVAL 3 MINUTE")
-        ).collect()
-    }
-    assert out["a"] == 200.0  # gap 0 ≤ 3min
-    assert out["b"] is None  # gap 5min > 3min → nulled
-
-
 def test_duplicate_right_rows_resolve_deterministically(spark):
     left = spark.createDataFrame(
         [(1, _ts(10), "x")], "user_id long, ts timestamp, tag string"

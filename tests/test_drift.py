@@ -10,11 +10,11 @@ exercised the way the injection waves exercise the older families.
 
 import math
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+    PSI_BUCKETS,
     chi2_drift_frozen,
     chi2_freeze_reference,
     ks_2sample,
@@ -31,12 +31,15 @@ def _vals(spark, xs):
     return spark.createDataFrame([(float(x),) for x in xs], "value double")
 
 
-def _psi(ref, cur, buckets=10):
-    return psi_profile_frozen(cur, psi_freeze_reference(ref, buckets=buckets))
+SPINE = list(range(1, PSI_BUCKETS + 1))
 
 
-def _ks(a, b, buckets=32):
-    return ks_2sample(ks_side_counts(a), b, buckets=buckets)
+def _psi(ref, cur):
+    return psi_profile_frozen(cur, psi_freeze_reference(ref))
+
+
+def _ks(a, b):
+    return ks_2sample(ks_side_counts(a), b)
 
 
 def _chi2(ref, cur):
@@ -48,8 +51,8 @@ def _chi2(ref, cur):
 
 def test_psi_identical_distributions_near_zero(spark):
     ref = _vals(spark, range(100))
-    rows = _psi(ref, _vals(spark, range(100)), buckets=4).collect()
-    assert [r.bucket for r in rows] == [1, 2, 3, 4]
+    rows = _psi(ref, _vals(spark, range(100))).collect()
+    assert [r.bucket for r in rows] == SPINE
     # identical sides: shares equal per bucket -> every term is 0
     for r in rows:
         assert r.psi_term == 0.0
@@ -60,19 +63,20 @@ def test_psi_identical_distributions_near_zero(spark):
 def test_psi_shifted_distribution_flags(spark):
     ref = _vals(spark, range(100))
     cur = _vals(spark, range(80, 180))  # mass moved to the top bucket
-    rows = _psi(ref, cur, buckets=4).collect()
+    rows = _psi(ref, cur).collect()
     total = rows[0].psi_total
     assert total > 0.2  # conventional "major shift" alarm
     by_bucket = {r.bucket: r for r in rows}
-    # 80% of current mass lands above the reference's last edge
-    assert by_bucket[4].cur_n == 100  # >75 edge catches 80..179
+    # 90% of current mass lands above the reference's last edge
+    assert by_bucket[10].cur_n == 90  # >89.1 edge catches 90..179
+    assert by_bucket[9].cur_n == 10  # 80..89 sit in (79.2, 89.1]
     assert by_bucket[1].cur_n == 0
 
 
 def test_psi_smoothing_keeps_one_sided_buckets_finite(spark):
     ref = _vals(spark, range(10))
     cur = _vals(spark, [100.0] * 5)  # all current mass beyond ref max
-    rows = _psi(ref, cur, buckets=2).collect()
+    rows = _psi(ref, cur).collect()
     for r in rows:
         assert r.psi_term is not None and math.isfinite(r.psi_term)
         assert math.isfinite(r.psi_total)
@@ -83,7 +87,7 @@ def test_psi_drops_nonfinite_values(spark):
     cur = spark.createDataFrame(
         [(0.5,), (None,), (NAN,), (7.0,)], "value double"
     )
-    rows = _psi(ref, cur, buckets=2).collect()
+    rows = _psi(ref, cur).collect()
     assert sum(r.ref_n for r in rows) == 8
     assert sum(r.cur_n for r in rows) == 2
 
@@ -92,17 +96,16 @@ def test_psi_constant_reference_collapses_deterministically(spark):
     # all edges equal -> comparison sum sends every row to bucket 1
     ref = _vals(spark, [5.0] * 20)
     cur = _vals(spark, [5.0] * 10 + [9.0] * 10)
-    rows = _psi(ref, cur, buckets=4).collect()
+    rows = _psi(ref, cur).collect()
     # 5.0 > 5.0 fails every comparison -> bucket 1; 9.0 clears all
-    # three duplicate edges -> bucket 4.  The FULL spine is emitted:
-    # buckets 2/3 are empty on both sides yet still present (with
+    # nine duplicate edges -> bucket 10.  The FULL spine is emitted:
+    # buckets 2..9 are empty on both sides yet still present (with
     # N_ref = N_cur = 20 their smoothed term happens to be 0, but the
     # rows must exist — see the sizes-differ test below).
-    assert [r.bucket for r in rows] == [1, 2, 3, 4]
+    assert [r.bucket for r in rows] == SPINE
     assert rows[0].ref_n == 20 and rows[0].cur_n == 10
-    assert (rows[1].ref_n, rows[1].cur_n) == (0, 0)
-    assert (rows[2].ref_n, rows[2].cur_n) == (0, 0)
-    assert rows[3].ref_n == 0 and rows[3].cur_n == 10
+    assert all((r.ref_n, r.cur_n) == (0, 0) for r in rows[1:-1])
+    assert rows[-1].ref_n == 0 and rows[-1].cur_n == 10
     # empty buckets report the real reference edges (all 5.0 here)
     assert rows[1].lo == 5.0 and rows[1].hi == 5.0
 
@@ -113,10 +116,10 @@ def test_psi_empty_bucket_term_counts_when_sizes_differ(spark):
     # spine must include it or psi_total underreports
     ref = _vals(spark, [5.0] * 30)
     cur = _vals(spark, [9.0] * 10)
-    rows = _psi(ref, cur, buckets=4).collect()
-    assert [r.bucket for r in rows] == [1, 2, 3, 4]
+    rows = _psi(ref, cur).collect()
+    assert [r.bucket for r in rows] == SPINE
     empty = [r for r in rows if r.ref_n == 0 and r.cur_n == 0]
-    assert len(empty) == 2
+    assert len(empty) == PSI_BUCKETS - 2
     assert all(r.psi_term != 0.0 for r in empty)
     total = rows[0].psi_total
     assert abs(sum(r.psi_term for r in rows) - total) < 1e-5
@@ -127,16 +130,11 @@ def test_psi_empty_current_scores_full_spine(spark):
     # cur_n is 0 throughout, ref_n carries the frozen counts
     ref = _vals(spark, range(10))
     cur = _vals(spark, []).where(F.lit(False))
-    rows = _psi(ref, cur, buckets=4).collect()
-    assert [r.bucket for r in rows] == [1, 2, 3, 4]
+    rows = _psi(ref, cur).collect()
+    assert [r.bucket for r in rows] == SPINE
     assert all(r.cur_n == 0 for r in rows)
     assert sum(r.ref_n for r in rows) == 10
     assert all(math.isfinite(r.psi_term) for r in rows)
-
-
-def test_psi_rejects_degenerate_buckets(spark):
-    with pytest.raises(ValueError):
-        _psi(_vals(spark, [1.0]), _vals(spark, [1.0]), buckets=1)
 
 
 # ----------------------------------------------------------------- KS
@@ -170,7 +168,7 @@ def test_ks_two_level_equals_naive_window(spark):
     # decomposition must equal the naive global-window CDF exactly
     a = _vals(spark, [i % 17 for i in range(500)])
     b = _vals(spark, [(i % 23) + 3 for i in range(400)])
-    row = _ks(a, b, buckets=8).collect()[0]
+    row = _ks(a, b).collect()[0]
 
     counts = (
         a.select(F.col("value").alias("v"), F.lit(1).alias("ca"), F.lit(0).alias("cb"))

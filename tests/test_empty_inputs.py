@@ -165,12 +165,6 @@ def test_band_bucket_profile_empty(empty_docs):
         release_staging()
 
 
-def test_max_bucket_cut_empty(empty_docs):
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import near_dup_pairs_banded
-
-    _expect_empty(near_dup_pairs_banded(empty_docs, max_bucket=10))
-
-
 def test_prefix_contained_empty(empty_docs):
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import prefix_contained
 

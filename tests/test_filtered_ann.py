@@ -279,34 +279,6 @@ def test_index_update_moves_vector_across_cells(spark, tmp_path_factory):
     assert rows[0]["__v"] == new_vec
 
 
-def test_ivf_filtered_twin_sql_single_rung_is_valid(spark):
-    """r13 (the r12 advice): probe_ladder(n_probe >= n_cells) has ONE
-    rung, and the twin generator used to emit `CASE ELSE n END` — a
-    DuckDB syntax error.  The single-rung twin must parse AND agree
-    with the engine's final-rung (probe-everything) search."""
-    import duckdb
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
-        _ivf_filtered_sql,
-    )
-
-    sql = _ivf_filtered_sql(
-        n_probe=8,  # >= n_cells (8) -> ladder == [8]
-        qpred="vec_id < 5",
-    )
-    assert "CASE  ELSE" not in sql and "CASE ELSE" not in sql
-    con = duckdb.connect()
-    try:
-        con.execute(
-            "CREATE VIEW embeddings AS SELECT * FROM "
-            "read_parquet('/root/testdata/sf0.001/embeddings.parquet')"
-        )
-        got = con.execute(sql).fetchall()
-    finally:
-        con.close()
-    assert got  # parsed and produced rows
-
-
 def test_index_update_emptying_a_cell_deletes_its_partition(
     spark, tmp_path_factory
 ):
@@ -316,11 +288,7 @@ def test_index_update_emptying_a_cell_deletes_its_partition(
     would leave the stale directory on disk and a search would surface
     BOTH copies — add_to_ivf_index must delete the emptied partition
     explicitly."""
-    dim = 4
-    centroids = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
-        "cell_id int, __c array<double>",
-    )
+    # the seeded quantizer takes ids 0 and 1 as the two centroids
     emb = spark.createDataFrame(
         [
             (0, [0.9, 0.1, 0.0, 0.0]),  # sole member of cell 0
@@ -330,7 +298,7 @@ def test_index_update_emptying_a_cell_deletes_its_partition(
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path_factory.mktemp("emptycell") / "idx")
-    lvec.build_ivf_index(emb, path, n_cells=2, centroids=centroids)
+    lvec.build_ivf_index(emb, path, n_cells=2)
     cells = spark.read.parquet(f"{path}/cells")
     assert cells.where("cell_id = 0").count() == 1
     # update id 0 to point at cell 1's centroid -> cell 0 empties
@@ -347,7 +315,7 @@ def test_index_update_emptying_a_cell_deletes_its_partition(
     import os
 
     assert not os.path.exists(f"{path}/cells/cell_id=0")
-    assert dim == len(rows[0]["__v"])
+    assert len(rows[0]["__v"]) == 4
 
 
 def test_compact_ivf_index_reduces_files_and_preserves_search(
@@ -412,7 +380,7 @@ def test_cosine_dedup_delta_admits_only_novel_vectors(spark):
     kept = sorted(
         r.vec_id
         for r in lvec.cosine_dedup_delta(
-            corpus, delta, threshold=0.9, n_planes=4
+            corpus, delta, n_planes=4
         ).collect()
     )
     assert kept == [11, 12]
@@ -433,7 +401,7 @@ def test_cosine_dedup_delta_never_joins_corpus_with_itself(spark):
         [(10, [0.0, 1.0])], "vec_id long, embedding array<float>"
     )
     kept = lvec.cosine_dedup_delta(
-        corpus, delta, threshold=0.9, n_planes=4
+        corpus, delta, n_planes=4
     ).collect()
     assert [r.vec_id for r in kept] == [10]
 
@@ -453,7 +421,7 @@ def test_cosine_dedup_delta_empty_corpus_admits_everything(spark):
     kept = sorted(
         r.vec_id
         for r in lvec.cosine_dedup_delta(
-            corpus, delta, threshold=0.9, n_planes=4
+            corpus, delta, n_planes=4
         ).collect()
     )
     # NULL drops (no geometry); the ragged 1-dim vector is still
@@ -503,7 +471,7 @@ def test_pq_filtered_search_returns_k_under_selective_predicate(
     emb = _emb(spark)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
-        emb, path, n_cells=8, m=4, k_codes=8, meta_cols=["label"]
+        emb, path, n_cells=8, meta_cols=["label"]
     )
     out = lvec.search_ivfpq_index_filtered(
         spark, path, _queries(emb), where="label = 5", k=4, n_probe=2
@@ -527,7 +495,7 @@ def test_pq_filtered_search_exhaustive_dials_equal_filtered_bruteforce(
     q = _queries(emb)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
-        emb, path, n_cells=8, m=4, k_codes=8, meta_cols=["label"]
+        emb, path, n_cells=8, meta_cols=["label"]
     )
     got = sorted(
         (r.query_id, r.vec_id, r.cos_sim, r.rk)
@@ -538,7 +506,6 @@ def test_pq_filtered_search_exhaustive_dials_equal_filtered_bruteforce(
             where="label IN (5, 7)",
             k=6,
             n_probe=8,
-            rerank=1 << 20,
         ).collect()
     )
     expect = sorted(
@@ -558,7 +525,7 @@ def test_pq_filtered_search_fewer_than_k_returns_all_matches(
     emb = _emb(spark)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
-        emb, path, n_cells=8, m=4, k_codes=8, meta_cols=["label"]
+        emb, path, n_cells=8, meta_cols=["label"]
     )
     out = lvec.search_ivfpq_index_filtered(
         spark,
@@ -567,7 +534,6 @@ def test_pq_filtered_search_fewer_than_k_returns_all_matches(
         where="label = 5",
         k=50,
         n_probe=2,
-        rerank=1 << 20,
     ).collect()
     n_matches = emb.where("label = 5").count()
     assert len(out) == n_matches
@@ -586,7 +552,7 @@ def test_pq_filtered_search_plan_pushes_both_predicates(
     emb = _emb(spark)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
-        emb, path, n_cells=8, m=4, k_codes=8, meta_cols=["label"]
+        emb, path, n_cells=8, meta_cols=["label"]
     )
     out = lvec.search_ivfpq_index_filtered(
         spark, path, _queries(emb), where="label = 5", k=2, n_probe=2
@@ -614,7 +580,7 @@ def test_pq_index_meta_delta_merge_preserves_metadata(
     emb = _emb(spark, n=48)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
-        emb, path, n_cells=4, m=4, k_codes=8, meta_cols=["label"]
+        emb, path, n_cells=4, meta_cols=["label"]
     )
     delta = _emb(spark, n=60).where(F.col("vec_id") >= 48)
     with pytest.raises(ValueError, match="metadata columns"):
@@ -630,7 +596,6 @@ def test_pq_index_meta_delta_merge_preserves_metadata(
         where="label = 3",
         k=60,
         n_probe=1,
-        rerank=1 << 20,
     )
     got_ids = {r.vec_id for r in out.where("query_id = 0").collect()}
     assert got_ids == {

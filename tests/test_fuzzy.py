@@ -15,7 +15,7 @@ def names(spark):
         [
             (1, "alpha"),
             (2, "alphb"),   # distance 1 from alpha, adjacent in sort
-            (3, "alphz"),   # distance 1 from both, within window 2
+            (3, "alphz"),   # distance 1 from both, within the window
             (4, "zebra"),   # far away in sort order and distance
         ],
         "id long, name string",
@@ -26,21 +26,25 @@ def test_window_pairs_within_threshold(names):
     got = {
         (r.id_a, r.id_b): r.distance
         for r in fuzzy_pairs_sorted_neighborhood(
-            names, "id", "name", window=2
+            names, "id", "name"
         ).collect()
     }
     assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 1}
 
 
-def test_window_one_misses_distant_sort_neighbors(names):
+def test_window_misses_distant_sort_neighbors(spark):
+    df = spark.createDataFrame(
+        [(1, "alpha"), (2, "alphb"), (3, "alphc"), (4, "alphd"), (5, "alphz")],
+        "id long, name string",
+    )
     got = {
         (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(
-            names, "id", "name", window=1
-        ).collect()
+        for r in fuzzy_pairs_sorted_neighborhood(df, "id", "name").collect()
     }
-    # alpha-alphz are 2 apart in sort order: window=1 cannot see them
-    assert got == {(1, 2), (2, 3)}
+    # alpha-alphz (distance 1) are 4 apart in sort order: the 3-row
+    # window cannot see them; every closer pair is found
+    every = {(a, b) for a in range(1, 6) for b in range(a + 1, 6)}
+    assert got == every - {(1, 5)}
 
 
 def test_blocking_cuts_cross_block_pairs(spark):
@@ -51,23 +55,18 @@ def test_blocking_cuts_cross_block_pairs(spark):
     unblocked = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", window=2
+            df, "id", "name"
         ).collect()
     }
     blocked = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", window=2, block_col=F.substring("name", 1, 1),
+            df, "id", "name", block_col=F.substring("name", 1, 1),
         ).collect()
     }
     assert (1, 2) in unblocked and (1, 2) in blocked
     # aa2~ba2 is distance 1 but crosses the first-char block boundary
     assert (2, 3) in unblocked and (2, 3) not in blocked
-
-
-def test_rejects_bad_window(names):
-    with pytest.raises(ValueError):
-        fuzzy_pairs_sorted_neighborhood(names, "id", "name", window=0)
 
 
 def test_multi_pass_reversed_key_recovers_prefix_typos(spark):
@@ -76,21 +75,19 @@ def test_multi_pass_reversed_key_recovers_prefix_typos(spark):
     the REVERSED string puts the shared suffix adjacent; the union of
     passes recovers the pair."""
     df = spark.createDataFrame(
-        [(1, "smith"), (2, "xmith"), (3, "tiger"), (4, "zzzzz")],
+        [(1, "smith"), (2, "xmith"), (3, "tiger"), (4, "zzzzz"),
+         (5, "umbra"), (6, "vapor"), (7, "wheat")],
         "id long, name string",
     )
     fwd = {
         (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", window=1
-        ).collect()
+        for r in fuzzy_pairs_sorted_neighborhood(df, "id", "name").collect()
     }
     assert (1, 2) not in fwd  # prefix typo: not sort-adjacent forward
     rev = fuzzy_pairs_sorted_neighborhood(
         df.withColumn("rname", F.reverse("name")),
         "id",
         "rname",
-        window=1,
     ).select("id_a", "id_b", "distance")
     both = fwd | {(r.id_a, r.id_b) for r in rev.collect()}
     assert (1, 2) in both

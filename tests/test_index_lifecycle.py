@@ -23,16 +23,14 @@ CODECS = {
         lvec.add_to_ivf_index,
         lvec.search_ivf_index,
         lvec.search_ivf_index_filtered,
-        {},
     ),
     "pq": (
         lambda emb, path: lvec.build_ivfpq_index(
-            emb, path, n_cells=4, m=4, k_codes=4, meta_cols=["label"]
+            emb, path, n_cells=4, meta_cols=["label"]
         ),
         lvec.add_to_ivfpq_index,
         lvec.search_ivfpq_index,
         lvec.search_ivfpq_index_filtered,
-        {"rerank": 2},
     ),
 }
 
@@ -123,7 +121,7 @@ def test_null_query_id_rule_is_independent_of_the_ladder(spark, tmp_path, codec)
     """Unfiltered search ranks a NULL-id query like any other; filtered
     search drops it, both when the ladder has several rungs
     (``n_probe < n_cells``) and when it has one (``n_probe >= n_cells``)."""
-    build, _add, search, filtered, dials = CODECS[codec]
+    build, _add, search, filtered = CODECS[codec]
     path = str(tmp_path / codec)
     params = build(_emb(spark, 0, 48), path)
     q = _queries(spark)
@@ -135,11 +133,11 @@ def test_null_query_id_rule_is_independent_of_the_ladder(spark, tmp_path, codec)
     def qids(df):
         return {r["query_id"] for r in df.select("query_id").distinct().collect()}
 
-    assert qids(search(spark, path, q, k=3, n_probe=2, params=params, **dials)) == ids | {None}
+    assert qids(search(spark, path, q, k=3, n_probe=2, params=params)) == ids | {None}
     for n_probe in (1, 4):
         out = filtered(
             spark, path, q, where="label = 1", k=3, n_probe=n_probe,
-            params=params, **dials,
+            params=params,
         )
         assert qids(out) == ids, n_probe
 
@@ -159,14 +157,14 @@ BEFORE_FOLD_JOBS = {
 
 @pytest.mark.parametrize("codec", sorted(CODECS))
 def test_calls_with_params_launch_no_more_jobs(spark, tmp_path, codec):
-    build, add, search, filtered, dials = CODECS[codec]
+    build, add, search, filtered = CODECS[codec]
     path = str(tmp_path / codec)
     params = build(_emb(spark, 0, 48), path)
     q = _queries(spark)
     calls = {
-        "search": lambda: search(spark, path, q, k=3, n_probe=2, params=params, **dials),
+        "search": lambda: search(spark, path, q, k=3, n_probe=2, params=params),
         "filtered": lambda: filtered(
-            spark, path, q, where="label = 1", k=3, n_probe=1, params=params, **dials
+            spark, path, q, where="label = 1", k=3, n_probe=1, params=params
         ),
         "add": lambda: add(_emb(spark, 48, 64), path, params=params),
     }

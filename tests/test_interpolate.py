@@ -46,18 +46,6 @@ def test_lerp_exact_and_clamp(spark):
     assert out["no-series"] is None  # left-outer: key has no series
 
 
-def test_null_extrapolation(spark):
-    queries, series = _frames(spark)
-    out = {
-        r.tag: r.interp_value
-        for r in interpolate_join(
-            queries, series, extrapolate="null"
-        ).collect()
-    }
-    assert out["before"] is None and out["after"] is None
-    assert out["mid"] == 150.0
-
-
 def test_unequal_spacing_quarter_point(spark):
     queries = spark.createDataFrame(
         [(1, _ts(11), "q")], "user_id long, ts timestamp, tag string"

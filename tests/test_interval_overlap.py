@@ -27,9 +27,9 @@ def _ivl(spark, pre, rows):
     )
 
 
-def _run(spark, lrows, rrows, **kw):
+def _run(spark, lrows, rrows):
     out = interval_overlap_join(
-        _ivl(spark, "l", lrows), _ivl(spark, "r", rrows), by="k", **kw
+        _ivl(spark, "l", lrows), _ivl(spark, "r", rrows), by="k"
     )
     return sorted(
         (r.k, r.l_id, r.r_id, r.overlap_seconds) for r in out.collect()
@@ -56,15 +56,14 @@ def test_containment_and_identity(spark):
 
 
 def test_multi_bucket_pair_emitted_once(spark):
-    # both intervals span many 1-minute buckets; the pair must emit
+    # both intervals span many 1-hour buckets; the pair must emit
     # exactly once despite sharing ~29 buckets
     got = _run(
         spark,
-        [(1, 1, 0, 30)],
-        [(1, 2, 1, 29)],
-        bucket_seconds=60,
+        [(1, 1, 0, 30 * 60)],
+        [(1, 2, 60, 29 * 60)],
     )
-    assert got == [(1, 1, 2, 1680.0)]
+    assert got == [(1, 1, 2, 28 * 3600.0)]
 
 
 def test_key_scoping_and_null_keys(spark):

@@ -90,12 +90,6 @@ class TestParquetSink:
         assert "PartitionFilters: [" in plan and "o_year" in plan.split("PartitionFilters")[1][:120]
         assert one_year.count() == orders.filter("o_year = 1995").count()
 
-    def test_coalesce_controls_file_count(self, orders, tmp_path):
-        out = tmp_path / "orders_single"
-        write_parquet(orders, str(out), coalesce=1)
-        files = [p for p in out.iterdir() if p.name.endswith(".parquet")]
-        assert len(files) == 1
-
     def test_path_validation(self, orders):
         with pytest.raises(ValueError):
             write_parquet(orders, "   ")
@@ -120,7 +114,7 @@ class TestCsvSink:
     def test_header_roundtrip(self, spark, orders, tmp_path):
         out = str(tmp_path / "orders_csv")
         slim = orders.select("o_orderkey", "o_orderstatus", "o_totalprice")
-        write_csv(slim, out, coalesce=1)
+        write_csv(slim, out)
         back = read_csv(
             spark,
             out,
@@ -467,45 +461,6 @@ class TestPartitionMaintenance:
         upsert_by_key(spark, root, updates, keys=["id"], partition_by=["o_year"])
         got = {r.id: r.payload for r in spark.read.parquet(root).collect()}
         assert got[0] == "v0-2" and got[119] == "v119-2" and got[129] == "v129"
-
-
-class TestCorruptRecords:
-    def _write(self, tmp_path):
-        src = tmp_path / "mixed.json"
-        src.write_text(
-            '{"doc_id": 1, "text": "good"}\n'
-            "this is not json at all\n"
-            '{"doc_id": 2, "text": "also good"}\n'
-        )
-        return str(src)
-
-    def test_permissive_quarantines_bad_lines(self, spark, tmp_path):
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("text", T.StringType()),
-            ]
-        )
-        df = read_json(
-            spark, self._write(tmp_path), schema=schema, corrupt_col="_bad"
-        ).cache()
-        good = df.filter("_bad IS NULL").collect()
-        bad = df.filter("_bad IS NOT NULL").collect()
-        assert sorted(r.doc_id for r in good) == [1, 2]
-        assert len(bad) == 1 and "not json" in bad[0]._bad
-        df.unpersist()
-
-    def test_failfast_aborts_on_bad_line(self, spark, tmp_path):
-        import pytest
-        from pyspark.sql import types as T
-
-        schema = T.StructType([T.StructField("doc_id", T.LongType())])
-        with pytest.raises(Exception, match="FAILFAST|Malformed|malformed"):
-            read_json(
-                spark, self._write(tmp_path), schema=schema, mode="FAILFAST"
-            ).collect()
 
 
 class TestDeleteWhere:

@@ -46,17 +46,17 @@ def test_persisted_search_equals_in_memory_operator(
     emb = _emb(spark)
     q = _queries(emb)
     path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(emb, path, n_cells=4)
     got = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, path, q, k=4, n_probe=2, rerank=3
+            spark, path, q, k=4, n_probe=2
         ).collect()
     )
     expect = sorted(
         tuple(r)
         for r in lvec.top_k_ann_ivfpq(
-            emb, q, k=4, n_cells=4, n_probe=2, rerank=3, m=4, k_codes=8
+            emb, q, k=4, n_cells=4, n_probe=2
         ).collect()
     )
     assert got == expect
@@ -104,7 +104,7 @@ def test_code_files_much_smaller_than_raw_index(spark, tmp_path_factory):
     raw = str(tmp_path_factory.mktemp("ivfpq") / "raw")
     pq = str(tmp_path_factory.mktemp("ivfpq") / "pq")
     lvec.build_ivf_index(emb, raw, n_cells=4)
-    lvec.build_ivfpq_index(emb, pq, n_cells=4, m=4, k_codes=16)
+    lvec.build_ivfpq_index(emb, pq, n_cells=4)
     raw_bytes = _dir_bytes(f"{raw}/cells")
     code_bytes = _dir_bytes(f"{pq}/codes")
     assert code_bytes < 0.5 * raw_bytes, (code_bytes, raw_bytes)
@@ -116,11 +116,11 @@ def test_persisted_search_recall_floor(spark, tmp_path_factory):
     emb = _emb(spark)
     q = _queries(emb)
     path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(emb, path, n_cells=4)
     got = {
         (r.query_id, r.vec_id)
         for r in lvec.search_ivfpq_index(
-            spark, path, q, k=4, n_probe=2, rerank=3
+            spark, path, q, k=4, n_probe=2
         ).collect()
     }
     truth = {
@@ -131,21 +131,21 @@ def test_persisted_search_recall_floor(spark, tmp_path_factory):
 
 
 def test_exhaustive_dials_reproduce_bruteforce(spark, tmp_path_factory):
-    """Probe-everything + full re-rank collapses the persisted search
-    to exact bruteforce — the verification-dial anchor, now for the
-    persisted form."""
+    """Probe-everything + a re-rank budget (4·k = 48) covering the
+    whole corpus collapses the persisted search to exact bruteforce —
+    the verification-dial anchor, now for the persisted form."""
     emb = _emb(spark, n=48)
     q = _queries(emb, n=2)
     path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(emb, path, n_cells=4)
     got = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, path, q, k=5, n_probe=4, rerank=1 << 20
+            spark, path, q, k=12, n_probe=4
         ).collect()
     )
     expect = sorted(
-        tuple(r) for r in lvec.top_k_bruteforce(emb, q, k=5).collect()
+        tuple(r) for r in lvec.top_k_bruteforce(emb, q, k=12).collect()
     )
     assert got == expect
 
@@ -187,7 +187,7 @@ def test_ivfpq_delta_merge_equals_frozen_rebuild(spark, tmp_path_factory):
         "vec_id long, embedding array<float>",
     )
     inc = str(tmp_path_factory.mktemp("ivfpq") / "inc")
-    lvec.build_ivfpq_index(base, inc, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(base, inc, n_cells=4)
     cents = spark.read.parquet(f"{inc}/centroids")
     books = spark.read.parquet(f"{inc}/codebooks")
     mtimes_before = {
@@ -215,20 +215,19 @@ def test_ivfpq_delta_merge_equals_frozen_rebuild(spark, tmp_path_factory):
         base.unionByName(delta),
         full,
         n_cells=4,
-        centroids=cents,
         codebooks=books,
     )
     q = _queries(base)
     got = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, inc, q, k=5, n_probe=2, rerank=3
+            spark, inc, q, k=5, n_probe=2
         ).collect()
     )
     expect = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, full, q, k=5, n_probe=2, rerank=3
+            spark, full, q, k=5, n_probe=2
         ).collect()
     )
     assert got == expect
@@ -251,7 +250,7 @@ def test_ivfpq_index_forget_removes_ids_from_all_relations(
     clones = emb.selectExpr("vec_id + 1000000 AS vec_id", "embedding")
     path = str(tmp_path_factory.mktemp("ivfpq_forget") / "idx")
     lvec.build_ivfpq_index(
-        emb.unionByName(clones), path, n_cells=4, m=4, k_codes=8
+        emb.unionByName(clones), path, n_cells=4
     )
     clean = str(tmp_path_factory.mktemp("ivfpq_forget") / "clean")
     cents = spark.read.parquet(f"{path}/centroids")
@@ -269,19 +268,19 @@ def test_ivfpq_index_forget_removes_ids_from_all_relations(
     # post-forget search equals a clean build with the SAME frozen
     # quantizer (clone ids are larger, so seeds/codebooks match)
     lvec.build_ivfpq_index(
-        emb, clean, n_cells=4, centroids=cents, codebooks=books
+        emb, clean, n_cells=4, codebooks=books
     )
     q = _queries(emb)
     got = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, path, q, k=5, n_probe=2, rerank=3
+            spark, path, q, k=5, n_probe=2
         ).collect()
     )
     expect = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, clean, q, k=5, n_probe=2, rerank=3
+            spark, clean, q, k=5, n_probe=2
         ).collect()
     )
     assert got == expect
@@ -295,7 +294,7 @@ def test_compact_ivfpq_codes_preserves_search(spark, tmp_path_factory):
 
     base = _emb(spark, n=64)
     path = str(tmp_path_factory.mktemp("ivfpq_compact") / "idx")
-    lvec.build_ivfpq_index(base, path, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(base, path, n_cells=4)
     for i in range(3):
         delta = spark.createDataFrame(
             [
@@ -309,7 +308,7 @@ def test_compact_ivfpq_codes_preserves_search(spark, tmp_path_factory):
     before = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, path, q, k=5, n_probe=2, rerank=3
+            spark, path, q, k=5, n_probe=2
         ).collect()
     )
     n_files = lambda: sum(  # noqa: E731
@@ -325,7 +324,7 @@ def test_compact_ivfpq_codes_preserves_search(spark, tmp_path_factory):
     after = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, path, q, k=5, n_probe=2, rerank=3
+            spark, path, q, k=5, n_probe=2
         ).collect()
     )
     assert after == before
@@ -345,7 +344,7 @@ def test_ivfpq_delta_merge_replay_is_idempotent(spark, tmp_path_factory):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path_factory.mktemp("ivfpq_replay") / "idx")
-    lvec.build_ivfpq_index(base, path, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(base, path, n_cells=4)
     lvec.add_to_ivfpq_index(delta, path)
     q = _queries(base)
 
@@ -355,7 +354,7 @@ def test_ivfpq_delta_merge_replay_is_idempotent(spark, tmp_path_factory):
         got = sorted(
             tuple(r)
             for r in lvec.search_ivfpq_index(
-                spark, path, q, k=5, n_probe=2, rerank=3
+                spark, path, q, k=5, n_probe=2
             ).collect()
         )
         return codes.count(), vecs.count(), got
@@ -385,7 +384,7 @@ def test_ivfpq_delta_merge_rejects_true_updates(spark, tmp_path_factory):
 
     emb = _emb(spark, n=48)
     path = str(tmp_path_factory.mktemp("ivfpq_guard") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(emb, path, n_cells=4)
     # identical replay of stored rows: allowed, no-op
     lvec.add_to_ivfpq_index(emb.filter(F.col("vec_id") < 8), path)
     assert spark.read.parquet(f"{path}/vectors").count() == 48
@@ -410,19 +409,10 @@ def test_full_erasure_leaves_readable_index(spark, tmp_path_factory):
     q = _queries(emb)
     for build, search, rels in (
         (lvec.build_ivf_index, lvec.search_ivf_index, ("cells",)),
-        (
-            lambda e, p: lvec.build_ivfpq_index(
-                e, p, n_cells=4, m=4, k_codes=8
-            ),
-            lvec.search_ivfpq_index,
-            ("codes", "vectors"),
-        ),
+        (lvec.build_ivfpq_index, lvec.search_ivfpq_index, ("codes", "vectors")),
     ):
         path = str(tmp_path_factory.mktemp("full_erase") / "idx")
-        if build is lvec.build_ivf_index:
-            build(emb, path, n_cells=4)
-        else:
-            build(emb, path)
+        build(emb, path, n_cells=4)
         lvec.delete_from_ivf_index(emb.select("vec_id"), path)
         for rel in rels:
             assert spark.read.parquet(f"{path}/{rel}").count() == 0, rel
@@ -481,7 +471,7 @@ def test_stream_pq_index_ingest_matches_frozen_rebuild(
     )
     idx = os.path.join(base, "index")
     stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=4, k_codes=8
+        stream, idx, os.path.join(base, "ckpt"), n_cells=4
     )
     assert spark.read.parquet(f"{idx}/codes").count() == 96
     assert spark.read.parquet(f"{idx}/vectors").count() == 96
@@ -489,20 +479,19 @@ def test_stream_pq_index_ingest_matches_frozen_rebuild(
     lvec.build_ivfpq_index(
         emb,
         full,
-        centroids=spark.read.parquet(f"{idx}/centroids"),
         codebooks=spark.read.parquet(f"{idx}/codebooks"),
     )
     q = _queries(emb)
     got = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, idx, q, k=5, n_probe=2, rerank=3
+            spark, idx, q, k=5, n_probe=2
         ).collect()
     )
     expect = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, full, q, k=5, n_probe=2, rerank=3
+            spark, full, q, k=5, n_probe=2
         ).collect()
     )
     assert got == expect
@@ -529,7 +518,7 @@ def test_stream_pq_index_ingest_two_wave_replay(spark, tmp_path_factory):
     )
     idx = os.path.join(base, "index")
     stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=4, k_codes=8
+        stream, idx, os.path.join(base, "ckpt"), n_cells=4
     )
     before_codes = sorted(
         map(tuple, spark.read.parquet(f"{idx}/codes").collect())
@@ -572,7 +561,7 @@ def test_stream_pq_ingest_recovers_interrupted_build(
     # simulate the torn first-batch build: everything written except
     # the final codebooks artifact
     lvec.build_ivfpq_index(
-        emb.where(F.col("vec_id") < 32), idx, n_cells=4, m=4, k_codes=8
+        emb.where(F.col("vec_id") < 32), idx, n_cells=4
     )
     shutil.rmtree(f"{idx}/codebooks")
     stream = (
@@ -581,7 +570,7 @@ def test_stream_pq_ingest_recovers_interrupted_build(
         .parquet(src)
     )
     stream_pq_index_ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=4, k_codes=8
+        stream, idx, os.path.join(base, "ckpt"), n_cells=4
     )
     assert spark.read.parquet(f"{idx}/codes").count() == 64
     assert spark.read.parquet(f"{idx}/vectors").count() == 64
@@ -605,7 +594,7 @@ def test_full_erasure_rerunnable_through_crash_window(
 
     emb = _emb(spark, n=32)
     path = str(tmp_path_factory.mktemp("erase_crash") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4, m=4, k_codes=8)
+    lvec.build_ivfpq_index(emb, path, n_cells=4)
 
     real_delete = W.delete_partition_dirs
 
@@ -655,7 +644,6 @@ def test_multirerank_equals_independent_calls(spark):
         multi = dict(
             lvec.top_k_ann_ivfpq_multirerank(
                 emb, q, k=4, reranks=(1, 2, 4), n_cells=4, n_probe=2,
-                k_codes=8,
             )
         )
         for r in (1, 2, 4):
@@ -663,7 +651,6 @@ def test_multirerank_equals_independent_calls(spark):
                 tuple(x)
                 for x in lvec.top_k_ann_ivfpq(
                     emb, q, k=4, n_cells=4, n_probe=2, rerank=r,
-                    m=4, k_codes=8,
                 ).collect()
             )
             got = sorted(tuple(x) for x in multi[r].collect())

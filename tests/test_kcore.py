@@ -3,9 +3,7 @@ separation, the fixed-iteration convergence contract, and the dirty-
 edge canonicalization shared with the rest of the graph family.
 """
 
-import pytest
-
-from yelp_review_data_analysis_using_big_data_technologies_spark.operators.graph import k_core
+from yelp_review_data_analysis_using_big_data_technologies_spark.operators.graph import PEEL_ROUNDS, k_core
 
 
 def _pairs(spark, edges):
@@ -14,9 +12,9 @@ def _pairs(spark, edges):
     )
 
 
-def _run(spark, edges, **kw):
+def _run(spark, edges):
     return {
-        r.id: r.degree for r in k_core(_pairs(spark, edges), **kw).collect()
+        r.id: r.degree for r in k_core(_pairs(spark, edges)).collect()
     }
 
 
@@ -34,26 +32,23 @@ def test_star_fully_peels(spark):
 def test_bridge_between_cliques_peels_but_cliques_stay(spark):
     k4a = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
     k4b = [(a, b) for a in range(11, 15) for b in range(a + 1, 15)]
-    got = _run(spark, k4a + k4b + [(4, 11)], k=3)
+    got = _run(spark, k4a + k4b + [(4, 11)])
     # both K4s survive; the bridge edge survives TOO (k-core keeps
     # every edge between core nodes), so its endpoints report 4
     assert got == {1: 3, 2: 3, 3: 3, 4: 4, 11: 4, 12: 3, 13: 3, 14: 3}
 
 
-def test_k1_keeps_every_edge_endpoint(spark):
-    got = _run(spark, [(1, 2), (3, 4)], k=1)
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-
-
 def test_fixed_iterations_report_residual_degree(spark):
-    # a 20-node path peels 2 nodes per round; after 3 rounds the
-    # middle 14 remain UNCONVERGED and report their residual degree —
-    # the documented fixed-iteration contract (more rounds finish it)
+    # a 21-node path peels 2 nodes per round; after PEEL_ROUNDS (6)
+    # rounds the middle 9 remain UNCONVERGED and report their residual
+    # degree — the documented fixed-iteration contract; a path short
+    # enough for the rounds peels away entirely
+    assert PEEL_ROUNDS == 6
     path = [(i, i + 1) for i in range(20)]
-    got = _run(spark, path, k=2, iterations=3)
-    assert set(got) == set(range(3, 18))
-    assert got[3] == 1 and got[10] == 2
-    assert _run(spark, path, k=2, iterations=11) == {}
+    got = _run(spark, path)
+    assert set(got) == set(range(6, 15))
+    assert got[6] == 1 and got[10] == 2
+    assert _run(spark, [(i, i + 1) for i in range(11)]) == {}
 
 
 def test_dirty_edges_canonicalize(spark):
@@ -64,9 +59,3 @@ def test_dirty_edges_canonicalize(spark):
     got = {r.id: r.degree for r in k_core(pairs).collect()}
     assert got == {1: 2, 2: 2, 3: 2}
 
-
-def test_validation(spark):
-    with pytest.raises(ValueError):
-        k_core(_pairs(spark, [(1, 2)]), k=0)
-    with pytest.raises(ValueError):
-        k_core(_pairs(spark, [(1, 2)]), iterations=0)

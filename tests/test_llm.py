@@ -70,7 +70,7 @@ class TestNearDupBanded:
     def test_finds_near_pair_not_far(self, docs):
         pairs = {
             (r.id_a, r.id_b): r.jaccard
-            for r in ldd.near_dup_pairs_banded(docs, threshold=0.5).collect()
+            for r in ldd.near_dup_pairs_banded(docs).collect()
         }
         assert (1, 2) in pairs and pairs[(1, 2)] == 1.0  # identical
         assert (1, 3) in pairs and 0.5 <= pairs[(1, 3)] < 1.0  # near dup
@@ -256,7 +256,7 @@ class TestCosineNearDupBanded:
 
     def test_banded_pairs_only_emits_verified_cosine(self, spark, smoke_dir):
         emb = spark.read.parquet(f"{smoke_dir}/embeddings.parquet")
-        out = lvec.cosine_near_dup_pairs(emb, threshold=0.4).collect()
+        out = lvec.cosine_near_dup_pairs(emb).collect()
         assert all(r.cos_sim >= 0.4 and r.id_a < r.id_b for r in out)
 
     def test_derived_planes_path_at_second_corpus_size(self, spark, smoke_dir):
@@ -266,7 +266,7 @@ class TestCosineNearDupBanded:
         # corpus and pin that the verified-pair contract still holds.
         emb = spark.read.parquet(f"{smoke_dir}/embeddings.parquet")
         small = emb.limit(40)
-        out = lvec.cosine_near_dup_pairs(small, threshold=0.4).collect()
+        out = lvec.cosine_near_dup_pairs(small).collect()
         assert all(r.cos_sim >= 0.4 and r.id_a < r.id_b for r in out)
         # the derivation itself must shrink with the corpus
         assert lvec.derive_n_planes(40) <= lvec.derive_n_planes(500)
@@ -540,11 +540,11 @@ class TestVectors:
         the exact re-ranked cosine."""
         emb = spark.createDataFrame(
             [
-                (0, [1.0, 0.0]),
-                (1, [0.9, 0.1]),
-                (2, [0.0, 1.0]),
-                (3, [-1.0, 0.0]),
-                (4, [0.1, 0.9]),
+                (0, [1.0, 0.0, 0.0, 0.0]),
+                (1, [0.9, 0.1, 0.0, 0.0]),
+                (2, [0.0, 1.0, 0.0, 0.0]),
+                (3, [-1.0, 0.0, 0.0, 0.0]),
+                (4, [0.1, 0.9, 0.0, 0.0]),
             ],
             "vec_id long, embedding array<float>",
         )
@@ -554,7 +554,7 @@ class TestVectors:
         exact = lvec.top_k_bruteforce(emb, q, k=5).orderBy("rk").collect()
         full = (
             lvec.top_k_ann_ivfpq(
-                emb, q, k=5, n_cells=2, n_probe=2, m=2, k_codes=4, rerank=5
+                emb, q, k=5, n_cells=2, n_probe=2, rerank=5
             )
             .orderBy("rk")
             .collect()
@@ -603,137 +603,10 @@ class TestMultimodal:
             [(1, bytearray(b"abc"), ("image", "png", "s://x"))],
             MEDIA_SCHEMA,
         )
-        out = lmm.extract_features(media, decode="fake").collect()
+        out = lmm.extract_features(media).collect()
         assert len(out) == 1
         r = out[0]
         assert (r.n_bytes, r.width, r.height, r.n_frames) == (3, 4, 1, 4)
-
-    def test_real_decode_raises_for_codec_required_payloads(self, spark):
-        media = spark.createDataFrame(
-            [(1, bytearray(b"abc"), ("image", "png", "s://x"))],
-            MEDIA_SCHEMA,
-        )
-        with pytest.raises(Exception, match="NotImplementedError|Pillow"):
-            lmm.extract_features(media, decode="real").collect()
-        audio = spark.createDataFrame(
-            [(1, bytearray(b"RIFFxxxx"), ("audio", "wav", "s://x"))],
-            MEDIA_SCHEMA,
-        )
-        with pytest.raises(Exception, match="NotImplementedError|codec"):
-            lmm.extract_features(audio, decode="real").collect()
-
-    @staticmethod
-    def _png(w, h):
-        import struct as st
-
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + st.pack(">I", 13)
-            + b"IHDR"
-            + st.pack(">II", w, h)
-            + b"\x08\x06\x00\x00\x00"
-            + b"\x00\x00\x00\x00"
-        )
-
-    @staticmethod
-    def _gif(w, h):
-        import struct as st
-
-        return b"GIF89a" + st.pack("<HH", w, h) + b"\xf7\x00\x00"
-
-    @staticmethod
-    def _bmp(w, h):
-        import struct as st
-
-        return (
-            b"BM" + b"\x00" * 12 + st.pack("<I", 40) + st.pack("<ii", w, -h)
-        )
-
-    @staticmethod
-    def _jpeg(w, h):
-        import struct as st
-
-        # length field (16) counts itself + 14 payload bytes
-        app0 = b"\xff\xe0" + st.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        sof0 = b"\xff\xc0" + st.pack(">H", 17) + b"\x08" + st.pack(">HH", h, w)
-        return b"\xff\xd8" + app0 + sof0 + b"\x00" * 10
-
-    def test_header_parser_all_formats(self):
-        assert lmm.parse_image_dimensions(self._png(640, 480)) == (640, 480)
-        assert lmm.parse_image_dimensions(self._gif(320, 200)) == (320, 200)
-        assert lmm.parse_image_dimensions(self._bmp(1024, 768)) == (1024, 768)
-        assert lmm.parse_image_dimensions(self._jpeg(800, 600)) == (800, 600)
-        assert lmm.parse_image_dimensions(b"not an image") is None
-        # truncated JPEG whose 0xFF fill run reaches the buffer tail:
-        # must return None, not struct.error from a short SOF unpack
-        assert (
-            lmm.parse_image_dimensions(
-                b"\xff\xd8\xff\xff\xc0" + b"\x00" * 6
-            )
-            is None
-        )
-
-    def test_real_decode_null_payload_yields_null_features(self, spark):
-        """NULL payload is MISSING data, not undecodable codec content:
-        real mode emits NULL features instead of killing the job with
-        the NotImplementedError reserved for real unparseable bytes."""
-        media = spark.createDataFrame(
-            [
-                (1, None, ("image", "png", "s://missing")),
-                (2, bytearray(self._png(64, 32)), ("image", "png", "s://ok")),
-            ],
-            MEDIA_SCHEMA,
-        )
-        out = {
-            r.media_id: (r.width, r.height, r.n_frames)
-            for r in lmm.extract_features(media, decode="real").collect()
-        }
-        assert out[1] == (None, None, None)
-        assert out[2] == (64, 32, 1)
-
-    def test_real_decode_true_dimensions_through_spark(self, spark):
-        rows = [
-            (1, bytearray(self._png(640, 480)), ("image", "png", "s://p")),
-            (2, bytearray(self._gif(320, 200)), ("image", "gif", "s://g")),
-            (3, bytearray(self._bmp(1024, 768)), ("image", "bmp", "s://b")),
-            (4, bytearray(self._jpeg(800, 600)), ("image", "jpeg", "s://j")),
-        ]
-        media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-        out = {
-            r.media_id: (r.width, r.height, r.n_frames)
-            for r in lmm.extract_features(media, decode="real").collect()
-        }
-        assert out == {
-            1: (640, 480, 1),
-            2: (320, 200, 1),
-            3: (1024, 768, 1),
-            4: (800, 600, 1),
-        }
-
-    @staticmethod
-    def _wav(channels=2, rate=44100, bits=16, n_frames=1000):
-        import struct as st
-
-        block_align = channels * bits // 8
-        fmt = st.pack("<HHIIHH", 1, channels, rate, rate * block_align, block_align, bits)
-        data = b"\x00" * (n_frames * block_align)
-        body = b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-        body += b"data" + st.pack("<I", len(data)) + data
-        return b"RIFF" + st.pack("<I", len(body)) + body
-
-    def test_wav_header_parser(self):
-        assert lmm.parse_wav_frames(self._wav(2, 44100, 16, 1000)) == (2, 44100, 1000)
-        assert lmm.parse_wav_frames(self._wav(1, 8000, 8, 37)) == (1, 8000, 37)
-        assert lmm.parse_wav_frames(b"RIFFxxxx") is None
-        assert lmm.parse_wav_frames(b"not audio at all") is None
-
-    def test_real_decode_wav_frame_count_through_spark(self, spark):
-        media = spark.createDataFrame(
-            [(1, bytearray(self._wav(n_frames=1234)), ("audio", "wav", "s://a"))],
-            MEDIA_SCHEMA,
-        )
-        r = lmm.extract_features(media, decode="real").collect()[0]
-        assert (r.width, r.height, r.n_frames) == (None, None, 1234)
 
     def test_documents_adapter_schema(self, spark, smoke_dir):
         docs = spark.read.parquet(f"{smoke_dir}/documents.parquet")
@@ -761,14 +634,17 @@ class TestNgramJaccard:
         assert out == {(1, 2): 0.75}
 
     def test_max_df_cuts_boilerplate_shingles(self, spark):
-        # every doc shares a boilerplate prefix; with the cut at df<=2
-        # the prefix shingles drop out and no pair survives
+        # every doc shares a boilerplate prefix; in more than MAX_DF
+        # docs the prefix shingles drop out and no pair survives
         rows = [(i, f"standard header text then unique{i} tail{i} words{i}")
-                for i in range(4)]
+                for i in range(ldd.MAX_DF + 1)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        none = ldd.ngram_jaccard_pairs(docs, threshold=0.2, max_df=2).collect()
+        none = ldd.ngram_jaccard_pairs(docs, threshold=0.2).collect()
         assert none == []
-        some = ldd.ngram_jaccard_pairs(docs, threshold=0.2, max_df=None).collect()
+        # below the cut the shared prefix alone pairs two of them
+        some = ldd.ngram_jaccard_pairs(
+            spark.createDataFrame(rows[:2], "doc_id long, text string"), threshold=0.2
+        ).collect()
         assert len(some) > 0
 
 
@@ -800,7 +676,7 @@ class TestFrameSampling:
             [(1, bytearray(b"x" * 100), ("video", "fake", "s://v"))],
             MEDIA_SCHEMA,
         )
-        out = lmm.sample_frames(media, n_samples=4).collect()
+        out = lmm.sample_frames(media).collect()
         frames = sorted(r.frame_idx for r in out)
         assert frames == [0, 1, 2, 3]  # floor(i*5/4) for i in 0..3
         assert all(0 <= r.frame_idx < r.n_frames for r in out)
@@ -811,46 +687,16 @@ class TestFrameSampling:
             [(1, bytearray(b"x" * 17), ("video", "fake", "s://v"))],
             MEDIA_SCHEMA,
         )
-        out = lmm.sample_frames(media, n_samples=4).collect()
+        out = lmm.sample_frames(media).collect()
         assert sorted(r.frame_idx for r in out) == [0, 1]
 
 
-class TestImageHeaderEdgeCases:
-    def test_jpeg_fill_bytes_before_marker(self):
-        # spec-legal 0xFF padding before SOF0 must be skipped, not
-        # parsed as a marker (which read a bogus segment length)
-        sof0 = b"\xff\xc0" + b"\x00\x11" + b"\x08" + b"\x00\x10\x00\x20" + b"\x03" + b"\x00" * 9
-        app0 = b"\xff\xe0\x00\x04\x00\x00"
-        payload = b"\xff\xd8" + app0 + b"\xff" + sof0
-        assert lmm.parse_image_dimensions(payload) == (32, 16)
-
-    def test_os2_core_header_bmp_rejected_not_garbled(self):
-        # BITMAPCOREHEADER (DIB size 12, u16 dims) must return None —
-        # reading i32 at the INFOHEADER offsets would fuse the fields
-        import struct
-
-        core = b"BM" + b"\x00" * 12 + struct.pack("<I", 12) + struct.pack(
-            "<HHHH", 10, 20, 1, 24
-        )
-        assert lmm.parse_image_dimensions(core + b"\x00" * 8) is None
-
-    def test_sample_frames_rejects_nonpositive_samples(self, spark):
-        import pytest as _pytest
-
-        media = spark.createDataFrame(
-            [(1, bytearray(b"x" * 10), ("video", "fake", "s://v"))],
-            MEDIA_SCHEMA,
-        )
-        with _pytest.raises(ValueError, match="n_samples"):
-            lmm.sample_frames(media, n_samples=0)
-
-
 class TestLineDedup:
-    def _run(self, spark, rows, **kw):
+    def _run(self, spark, rows):
         from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
 
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        return {r.doc_id: r for r in line_dedup(df, **kw).collect()}
+        return {r.doc_id: r for r in line_dedup(df).collect()}
 
     def test_keep_first_across_corpus(self, spark):
         boiler = "accept all cookies to continue reading this site"

@@ -4,9 +4,8 @@ VERDICT r7 ask #3).
 A boilerplate-heavy corpus puts a large fraction of docs into ONE
 near-dup clique (template + tiny per-doc edits — exact-dedup-proof);
 every member shares band buckets and the self-join degenerates to
-clique² candidate pairs.  Pins the ``max_bucket`` mitigation: the cut
-drops oversize buckets identically in both engines, is a no-op when
-every bucket fits, and :func:`band_bucket_profile` detects the regime
+clique² candidate pairs.  Pins that regime and its detection:
+:func:`band_bucket_profile` flags buckets above ``OVERSIZE_BUCKET``
 before the pair join runs.
 """
 
@@ -15,7 +14,6 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,8 +33,7 @@ N = 240
 FRAC = 0.5  # half the corpus is one clique
 
 
-@pytest.fixture(scope="module")
-def clique_docs(spark):
+def _clique_docs(spark, n, frac):
     w = F.array(*[F.lit(x) for x in WORDS])
     rand_words = F.transform(
         F.sequence(F.lit(1), F.lit(25)),
@@ -52,20 +49,25 @@ def clique_docs(spark):
     clique_text = F.concat(
         F.lit(TEMPLATE + " edit doc "), F.col("doc_id").cast("string")
     )
-    docs = (
-        spark.range(N)
+    return (
+        spark.range(n)
         .withColumnRenamed("id", "doc_id")
         .select(
             "doc_id",
             F.when(
                 F.pmod(F.xxhash64("doc_id", F.lit(9)), F.lit(1000))
-                < int(FRAC * 1000),
+                < int(frac * 1000),
                 clique_text,
             )
             .otherwise(F.concat_ws(" ", rand_words))
             .alias("text"),
         )
     )
+
+
+@pytest.fixture(scope="module")
+def clique_docs(spark):
+    docs = _clique_docs(spark, N, FRAC)
     yield docs.cache()
     docs.unpersist()
 
@@ -75,9 +77,9 @@ def n_clique(clique_docs):
     return clique_docs.filter(F.col("text").startswith("terms of")).count()
 
 
-def _pairs(docs, max_bucket):
+def _pairs(docs):
     try:
-        return ldd.near_dup_pairs_banded(docs, max_bucket=max_bucket).count()
+        return ldd.near_dup_pairs_banded(docs).count()
     finally:
         release_staging()
 
@@ -93,60 +95,30 @@ def test_uncapped_blows_up_to_clique_squared(clique_docs, n_clique):
     # (banded LSH is probabilistic — a pair collides only if it
     # shares ≥1 band, so allow a small recall slack).
     expected = n_clique * (n_clique - 1) // 2
-    assert _pairs(clique_docs, max_bucket=None) >= 0.95 * expected
+    assert _pairs(clique_docs) >= 0.95 * expected
 
 
-def test_cap_below_clique_drops_the_bucket(clique_docs, n_clique):
-    capped = _pairs(clique_docs, max_bucket=n_clique // 2)
-    uncapped = _pairs(clique_docs, max_bucket=None)
-    assert capped < uncapped
-    # candidate work is now bounded by the cap, not the clique
-    assert capped < (n_clique // 2) ** 2
-
-
-def test_cap_above_every_bucket_is_a_noop(clique_docs):
-    assert _pairs(clique_docs, max_bucket=10 * N) == _pairs(
-        clique_docs, max_bucket=None
-    )
-
-
-def test_profile_detects_the_regime(clique_docs, n_clique):
+def test_profile_detects_the_regime(spark):
+    # a clique larger than the profile's oversize bound (the profile
+    # builds band keys only, no pair join, so the size is cheap)
+    n = ldd.OVERSIZE_BUCKET + 100
+    docs = _clique_docs(spark, n, frac=1.0)
     try:
-        row = ldd.band_bucket_profile(
-            clique_docs, max_bucket=n_clique // 2
-        ).collect()[0]
+        row = ldd.band_bucket_profile(docs).collect()[0]
     finally:
         release_staging()
     assert row["oversize_buckets"] >= 1
     # a few members can hash out of the dominant bucket per band
-    assert row["max_bucket_size"] >= 0.9 * n_clique
-    assert row["oversize_pairs"] >= 0.8 * (n_clique * (n_clique - 1) // 2)
+    assert row["max_bucket_size"] >= 0.9 * n
+    assert row["oversize_pairs"] >= 0.8 * (n * (n - 1) // 2)
     assert row["candidate_pairs"] >= row["oversize_pairs"]
 
 
-def test_capped_twin_agrees_with_duckdb(spark, clique_docs, tmp_path, check):
-    """The max_bucket cut must drop the SAME buckets in both engines."""
-    out = str(tmp_path / "documents.parquet")
-    clique_docs.toPandas().to_parquet(out)
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{out}')")
-    cap = 40
-
-    def q(spark, sf_dir):
-        return ldd.near_dup_pairs_banded(clique_docs, max_bucket=cap).orderBy(
-            "id_a", "id_b"
-        )
-
+def test_profile_below_the_bound_reports_no_oversize(clique_docs, n_clique):
     try:
-        problems = check.compare(
-            "lsh_capped_twin",
-            spark,
-            con,
-            "",
-            q,
-            ldd.near_dup_banded_sql(max_bucket=cap),
-        )
+        row = ldd.band_bucket_profile(clique_docs).collect()[0]
     finally:
         release_staging()
-        con.close()
-    assert not problems, "\n".join(problems)
+    assert n_clique < ldd.OVERSIZE_BUCKET
+    assert row["max_bucket_size"] >= 0.9 * n_clique
+    assert row["oversize_buckets"] == 0 and row["oversize_pairs"] == 0

@@ -10,10 +10,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.llm.normalize import (
-    FORMS,
-    normalize_text,
-)
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.normalize import normalize_text
 
 
 @pytest.fixture(scope="module")
@@ -46,29 +43,6 @@ def test_changed_flag_marks_only_rewritten_rows(spark, docs):
 def test_null_and_empty_pass_through(spark, docs):
     out = {r["doc_id"]: r["text"] for r in normalize_text(docs).collect()}
     assert out[4] == "" and out[5] is None
-
-
-def test_out_col_keeps_original(spark, docs):
-    row = (
-        normalize_text(docs, out_col="text_nfc")
-        .where("doc_id = 2")
-        .collect()[0]
-    )
-    assert row["text"] != row["text_nfc"]
-    assert row["text_nfc"] == unicodedata.normalize("NFC", "café résumé")
-
-
-def test_nfkc_compatibility_fold(spark):
-    # NFKC folds compatibility chars (ﬁ ligature → fi) that NFC keeps
-    df = spark.createDataFrame([(1, "ﬁle")], "doc_id BIGINT, text STRING")
-    out = normalize_text(df, form="NFKC").collect()[0]["text"]
-    assert out == "file"
-
-
-def test_bad_form_rejected(spark, docs):
-    with pytest.raises(ValueError, match="form must be one of"):
-        normalize_text(docs, form="NFX")
-    assert FORMS == ("NFC", "NFD", "NFKC", "NFKD")
 
 
 def test_plan_is_arrow_batched_not_row_udf(spark, docs):

@@ -12,11 +12,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.ohlc import ohlc_bars
 
 
-def _bars(spark, rows, **kw):
+def _bars(spark, rows):
     df = spark.createDataFrame(
         rows, "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
     )
-    out = ohlc_bars(df, **kw).collect()
+    out = ohlc_bars(df).collect()
     return {(r.event_type, r.bucket_ts): r for r in out}
 
 
@@ -74,17 +74,6 @@ def test_null_and_nonfinite_rows_drop_from_every_column(spark):
     b = _bars(spark, rows)[("a", T(9))]
     assert (b.open, b.close, b.n_events) == (4.0, 6.0, 2)
     assert b.total_value == 10.0 and b.mean_value == 5.0
-
-
-def test_day_bucket_unit(spark):
-    rows = [
-        (1, datetime(2024, 5, 1, 1), "a", 1.0),
-        (2, datetime(2024, 5, 1, 23), "a", 2.0),
-        (3, datetime(2024, 5, 2, 0), "a", 3.0),
-    ]
-    b = _bars(spark, rows, bucket="day")
-    assert b[("a", datetime(2024, 5, 1))].close == 2.0
-    assert b[("a", datetime(2024, 5, 2))].open == 3.0
 
 
 def test_streaming_ohlc_drops_nonfinite_like_batch(spark):

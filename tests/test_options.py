@@ -1,9 +1,11 @@
 """Option guard (a plain AST scan, no Spark): one value in use is a
 constant.  Every defaulted parameter of a module-level function in the
 package or the entry module must be passed a value other than its
-default by some call in the repo — the package, the entry module,
-``bench.py``, ``scripts/``, ``perfbench/`` or ``tests/``.  A parameter
-no call sets is a knob nothing turns: drop it and inline its value.
+default by some call outside the tests — the package, the entry
+module, ``bench.py``, ``scripts/`` or ``perfbench/``.  A parameter no
+such call sets is a knob nothing turns: drop it and inline its value.
+Tests are not callers: a value only a test passes is a knob kept for
+the test, so a test reaches the behaviour through its fixture instead.
 
 A call passes a parameter through a keyword, a positional, a
 ``*args`` / ``**kwargs`` spread or a ``functools.partial``.  A literal
@@ -26,7 +28,18 @@ of a private (``_``-prefixed) module-level helper to which every call
 passes the same literal or module constant (a constant and the literal
 it is assigned count as one value).  Calls reach a private helper only
 from its own module or through an import of that module; a helper the
-repo passes as a value is skipped."""
+repo passes as a value is skipped.
+
+A third scan covers the converse: no call outside the tests passes a
+package function its own default — a literal equal to it, or the very
+expression the default is written as.  The value would be written
+twice, and a changed default would silently stop reaching that call.
+A different name that happens to hold the same value is left alone:
+a module constant shared with a DuckDB twin is how a call pins its
+dial.  A fourth
+fails on a call that passes a keyword no package function of that
+name accepts: a folded parameter a call still sets, which the other
+scans cannot see and which fails only when that call runs."""
 
 import ast
 import builtins
@@ -45,22 +58,27 @@ ALLOWED = {
         "perfbench/run.py calls release_staging(blocking=True); the "
         "benchmark is frozen, so its call must keep working"
     ),
+    f"{PKG}/llm/vectors.py::build_ivfpq_index.codebooks": (
+        "fixed state only a test can inject: the merge, erase and "
+        "streaming-ingest tests compare an incrementally maintained PQ "
+        "index with a rebuild under the SAME frozen codebooks, and the "
+        "Lloyd fit depends on its training sample, so no "
+        "seeded rebuild over a different corpus reproduces them"
+    ),
+    # ``path path::func.param``: a file whose calls may pass that
+    # parameter its default
+    f"perfbench/run.py {PKG}/llm/staging.py::release_staging.blocking": (
+        "the frozen benchmark passes release_staging its default "
+        "explicitly; its files change only with the benchmark"
+    ),
 }
 
 
 def _files():
-    """``path`` → source of every Python file whose calls count."""
-    paths = list(_sources())
-    for top in ("tests", os.path.join("perfbench", "tests")):
-        for dirpath, dirs, files in os.walk(os.path.join(ROOT, top)):
-            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
-            paths += [
-                os.path.relpath(os.path.join(dirpath, f), ROOT)
-                for f in sorted(files)
-                if f.endswith(".py")
-            ]
+    """``path`` → source of every Python file whose calls count: the
+    non-test sources."""
     out = {}
-    for path in paths:
+    for path in _sources():
         with open(os.path.join(ROOT, path)) as f:
             out[path] = f.read()
     return out
@@ -68,6 +86,10 @@ def _files():
 
 def _defines_options(path):
     return path.startswith(PKG + os.sep) or path == "__spark_entry__.py"
+
+
+def _is_test(path):
+    return path.startswith("tests" + os.sep) or os.sep + "tests" + os.sep in path
 
 
 def _literal(node):
@@ -118,31 +140,41 @@ class _Function:
         kw_defaults = {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
         self.defaults = {**pos_defaults, **kw_defaults}
         self.set = set()
+        #: ``path:line path::func.param`` of each call passing a default
+        self.redundant = []
         self.required = [p for p in self.positional + [p.arg for p in a.kwonlyargs] if p not in self.defaults]
         #: required param → the key of each value a call passes
         #: (``None``: a value that is not a constant, or unknown)
         self.values = {p: set() for p in self.required}
         self.calls = 0
+        self.params = set(self.positional) | {p.arg for p in a.kwonlyargs}
+        self.kwargs = a.kwarg is not None
+
+    def accepts(self, keyword):
+        return self.kwargs or keyword in self.params
 
     def passes(self, param, value):
         """Record that a call passes ``value`` (``None``: an unknown
-        value, such as a spread) to ``param``."""
+        value, such as a spread) to ``param``; whether ``value`` is the
+        parameter's own default."""
         if param not in self.defaults:
-            return
+            return False
         default = self.defaults[param]
         if value is not None:
             lit = _literal(value)
             if lit is not None and lit == _literal(default):
-                return
+                return True
             if lit is None and ast.dump(value) == ast.dump(default):
-                return
+                return True
         self.set.add(param)
+        return False
 
-    def call(self, args, keywords, key=None):
+    def call(self, args, keywords, key=None, where=None):
         """Record a call.  ``key`` (see :func:`_constants`) records the
         values it passes to required parameters; ``None``: the call
         may target a same-named function of another module, so it
-        sets options but leaves those values alone."""
+        sets options but leaves those values alone.  ``where``
+        (``path:line``) records each default the call passes back."""
         given = {}
         for i, arg in enumerate(args):
             if isinstance(arg, ast.Starred):
@@ -150,15 +182,16 @@ class _Function:
                     self.passes(p, None)
                 break
             if i < len(self.positional):
-                self.passes(self.positional[i], arg)
                 given[self.positional[i]] = arg
         for kw in keywords:
             if kw.arg is None:
                 for p in self.defaults:
                     self.passes(p, None)
             else:
-                self.passes(kw.arg, kw.value)
                 given[kw.arg] = kw.value
+        for p, value in given.items():
+            if self.passes(p, value) and where is not None:
+                self.redundant.append(f"{where} {self.key}.{p}")
         if key is not None:
             self.calls += 1
             for p in self.required:
@@ -265,10 +298,11 @@ class _File:
 def _scan(files):
     """Record every call in ``files`` (``path`` → source) on the
     module-level package and entry functions it reaches.  Returns
-    ``(funcs, as_values)``: name → its ``_Function`` records, and the
-    names some file passes as a value (whose calls the scan cannot
-    see)."""
-    trees = {path: ast.parse(src) for path, src in files.items()}
+    ``(funcs, as_values, unknown)``: name → its ``_Function`` records,
+    the names some file passes as a value (whose calls the scan cannot
+    see), and ``path:line func(keyword=)`` of each call passing a
+    keyword that no package function of that name accepts."""
+    trees = {path: ast.parse(src) for path, src in files.items() if not _is_test(path)}
     funcs = {}
     for path, tree in trees.items():
         if _defines_options(path):
@@ -295,7 +329,7 @@ def _scan(files):
                     )
                 ]
 
-    unnamed, as_values = [], set()
+    unnamed, as_values, unknown = [], set(), []
 
     def forward(fdef, keywords, depth=0):
         """Keywords a call passes into ``fdef``'s ``**kwargs`` reach
@@ -330,8 +364,14 @@ def _scan(files):
             callees.add(id(node.func))
             kind, target, args, func = c.resolve(node)
             if kind == "package":
+                unknown += [
+                    f"{path}:{node.lineno} {c.name_of(func)}({k.arg}=)"
+                    for k in node.keywords
+                    if k.arg and not any(f.accepts(k.arg) for f in target)
+                ]
                 for f in target:
-                    f.call(args, node.keywords, key if c.reaches(path, func, f) else None)
+                    reached = c.reaches(path, func, f)
+                    f.call(args, node.keywords, key if reached else None, f"{path}:{node.lineno}" if reached else None)
                     forward(f.node, node.keywords)
             elif kind == "local" and not isinstance(target, ast.ClassDef):
                 forward(target, node.keywords)
@@ -353,14 +393,14 @@ def _scan(files):
         for f in funcs[name]:
             for args, keywords in unnamed:
                 f.call(args, keywords)
-    return funcs, as_values
+    return funcs, as_values, sorted(unknown)
 
 
 def _unset(files):
     """Sorted ``path::func.param`` of every defaulted parameter of a
     module-level package or entry function that no call in ``files``
     passes a non-default value."""
-    funcs, _ = _scan(files)
+    funcs, _, _ = _scan(files)
     return sorted(
         f"{f.key}.{p}" for fs in funcs.values() for f in fs for p in f.defaults if p not in f.set
     )
@@ -372,7 +412,7 @@ def _fixed(files):
     which every call in ``files`` passes the same literal or module
     constant.  A function some file passes as a value is skipped: its
     calls are not all visible."""
-    funcs, as_values = _scan(files)
+    funcs, as_values, _ = _scan(files)
     return sorted(
         f"{f.key}.{p}"
         for name, fs in funcs.items()
@@ -382,6 +422,22 @@ def _fixed(files):
         for p in f.required
         if len(f.values[p]) == 1 and None not in f.values[p]
     )
+
+
+def _redundant(files):
+    """Sorted ``path:line path::func.param`` of every call in ``files``
+    that passes a package or entry function its own default, leaving
+    out the parameters in ``ALLOWED``."""
+    funcs, _, _ = _scan(files)
+    return sorted(
+        r for fs in funcs.values() for f in fs for r in f.redundant if _call_site(r) not in ALLOWED
+    )
+
+
+def _call_site(redundant):
+    """``path path::func.param`` of a ``path:line path::func.param``."""
+    where, key = redundant.split(" ", 1)
+    return f"{where.rsplit(':', 1)[0]} {key}"
 
 
 def test_scan_flags_a_parameter_no_call_sets():
@@ -394,7 +450,7 @@ def test_scan_flags_a_parameter_no_call_sets():
             "def run(fn, *a):\n    fn(0, w=1)\n    return g(*a)\n"
             "def e(x, deep=1):\n    return x\n"
         ),
-        "tests/test_m.py": (
+        "scripts/m_cli.py": (
             "import functools\n"
             f"from {PKG}.m import e, f as ff, h, run\n"
             "from functools import partial\n"
@@ -405,6 +461,8 @@ def test_scan_flags_a_parameter_no_call_sets():
             "run(h)\n"
             "partial(h, n=6)\n"
         ),
+        # a test's call is not a caller: ``unset`` stays unset
+        "tests/test_m.py": f"from {PKG}.m import f\nf(0, unset=4, same='y')\n",
     }
     m = f"{PKG}/m.py::"
     assert _unset(planted) == [m + "f.same", m + "f.unset", m + "g.by"]
@@ -419,7 +477,11 @@ def test_every_option_is_set_by_some_call():
 
 
 def test_allowlist_holds_only_unset_options():
-    assert sorted(ALLOWED) == [p for p in _unset(_files()) if p in ALLOWED]
+    options = sorted(p for p in ALLOWED if " " not in p)
+    assert options == [p for p in _unset(_files()) if p in ALLOWED]
+    funcs, _, _ = _scan(_files())
+    sites = {_call_site(r) for fs in funcs.values() for f in fs for r in f.redundant}
+    assert sorted(p for p in ALLOWED if " " in p) == sorted(sites & set(ALLOWED))
 
 
 def test_scan_flags_a_required_parameter_every_call_fixes():
@@ -435,7 +497,8 @@ def test_scan_flags_a_required_parameter_every_call_fixes():
             "    _esc(df, 'a')\n    return map(_esc, [df])\n"
         ),
         f"{PKG}/other.py": "def _h(a, b, c):\n    return a\n",
-        "tests/test_m.py": f"from {PKG}.m import _h\n_h(0, 'id', 3)\n",
+        # a test's call does not unfix a parameter
+        "tests/test_m.py": f"from {PKG}.m import _h\n_h(0, 'ts', 4)\n",
     }
     m = f"{PKG}/m.py::"
     assert _fixed(planted) == [m + "_h.col", m + "_h.n"]
@@ -447,4 +510,52 @@ def test_no_private_helper_parameter_is_fixed_by_every_call():
         "required parameters of private helpers to which every call "
         "passes the same literal or module constant (fold the value "
         "into the helper and delete the parameter):\n  " + "\n  ".join(fixed)
+    )
+
+
+def test_scan_flags_a_call_that_passes_a_default():
+    planted = {
+        f"{PKG}/m.py": (
+            "N = 5\n"
+            "def f(a, k=1, *, w='x', n=N):\n    return a\n"
+            "def run(df):\n"
+            "    f(df, 1)\n    f(df, 2, w='x')\n    f(df, n=N)\n    return f(df, w='y', n=6)\n"
+        ),
+        "tests/test_m.py": f"from {PKG}.m import f\nf(0, k=1)\n",
+    }
+    m = f"{PKG}/m.py"
+    assert _redundant(planted) == [
+        f"{m}:5 {m}::f.k",
+        f"{m}:6 {m}::f.w",
+        f"{m}:7 {m}::f.n",
+    ]
+
+
+def test_no_call_passes_a_default():
+    redundant = _redundant(_files())
+    assert redundant == [], (
+        "calls that pass a function its own default (drop the "
+        "argument):\n  " + "\n  ".join(redundant)
+    )
+
+
+def test_scan_flags_a_keyword_no_target_accepts():
+    planted = {
+        f"{PKG}/m.py": (
+            "def f(a, k=1):\n    return a\n"
+            "def g(a, **kw):\n    return a\n"
+            "def run(df):\n    f(df, k=2)\n    g(df, any=1)\n    return f(df, gone=3)\n"
+        ),
+        f"{PKG}/other.py": "def f(a, gone=0):\n    return a\n",
+        "scripts/m_cli.py": f"from {PKG}.m import f\nf(0, folded=1)\n",
+    }
+    _, _, unknown = _scan(planted)
+    assert unknown == ["scripts/m_cli.py:2 f(folded=)"]
+
+
+def test_no_call_passes_a_keyword_its_target_lacks():
+    _, _, unknown = _scan(_files())
+    assert unknown == [], (
+        "calls that pass a keyword no package function of that name "
+        "accepts (a folded parameter the call still sets):\n  " + "\n  ".join(unknown)
     )

@@ -206,17 +206,6 @@ def test_cc_alternating_labels_invariant(docs_by_parts):
     _assert_invariant(_runs(docs_by_parts, fn))
 
 
-def test_lsh_max_bucket_cut_invariant(docs_by_parts):
-    """r8: the oversize-bucket cut counts docs per band bucket — a
-    global property; partition layout must not change which buckets
-    are dropped."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import near_dup_pairs_banded
-
-    _assert_invariant(
-        _runs(docs_by_parts, lambda d: near_dup_pairs_banded(d, max_bucket=3))
-    )
-
-
 def test_band_bucket_profile_invariant(docs_by_parts):
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import band_bucket_profile
 
@@ -293,7 +282,7 @@ def test_winnow_pairs_invariant(docs_by_parts):
     _assert_invariant(
         _runs(
             docs_by_parts,
-            lambda d: winnow_pairs(winnow_fingerprints(d), min_shared=1),
+            lambda d: winnow_pairs(winnow_fingerprints(d)),
         )
     )
 
@@ -328,5 +317,5 @@ def test_tfidf_cosine_pairs_invariant(docs_by_parts):
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.terms import tfidf_cosine_pairs
 
     _assert_invariant(
-        _runs(docs_by_parts, lambda d: tfidf_cosine_pairs(d, min_sim=0.0))
+        _runs(docs_by_parts, tfidf_cosine_pairs)
     )

@@ -65,33 +65,24 @@ class TestPackBinsProperty:
     @given(
         st.lists(
             st.tuples(
-                st.integers(min_value=0, max_value=500),  # doc_id
-                st.integers(min_value=1, max_value=40),  # n_tokens
+                st.integers(min_value=0, max_value=50_000),  # doc_id
+                st.integers(min_value=1, max_value=400),  # n_tokens
             ),
             min_size=1,
             max_size=40,
             unique_by=lambda t: t[0],
         ),
-        st.integers(min_value=1, max_value=9),  # bucket_size
-        st.integers(min_value=4, max_value=64),  # budget
     )
-    def test_two_level_prefix_matches_python_model(
-        self, spark, rows, bucket_size, budget
-    ):
+    def test_two_level_prefix_matches_python_model(self, spark, rows):
         df = spark.createDataFrame(rows, "doc_id long, n long")
         got = {
             r.doc_id: (r.offset_tokens, r.bin_id)
-            for r in lpk.pack_bins(
-                df,
-                budget=budget,
-                tokens_col="n",
-                bucket_size=bucket_size,
-            ).collect()
+            for r in lpk.pack_bins(df, tokens_col="n").collect()
         }
         off = 0
         expect = {}
         for doc_id, n in sorted(rows):
-            expect[doc_id] = (off, off // budget)
+            expect[doc_id] = (off, off // lpk.BUDGET)
             off += n
         assert got == expect
 
@@ -186,13 +177,12 @@ class TestMixtureParityProperty:
             ).collect()
         ]
         con = duckdb.connect()
-        con.register("docs", df.toPandas())
+        con.register("documents", df.toPandas())
         oracle = [
             tuple(map(str, r))
             for r in con.execute(
                 lsmp.mixture_report_sql(
                     weights,
-                    table="docs",
                     domain_expr="domain",
                     tokens_expr="n_tok",
                 )

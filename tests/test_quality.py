@@ -35,20 +35,9 @@ class TestDecontamination:
     def test_overlap_threshold(self, corpus, bench):
         got = {
             r.doc_id: r.n_shared
-            for r in ldec.contamination_overlap(
-                corpus, bench, min_shared=2
-            ).collect()
+            for r in ldec.contamination_overlap(corpus, bench).collect()
         }
         assert got == {1: 2}
-
-    def test_min_shared_one_admits_single_overlap(self, corpus, bench):
-        got = {
-            r.doc_id
-            for r in ldec.contamination_overlap(
-                corpus, bench, min_shared=1
-            ).collect()
-        }
-        assert got == {1, 2}
 
     def test_decontaminate_removes_flagged_only(self, corpus, bench):
         kept = sorted(
@@ -128,18 +117,6 @@ def test_empty_text_scores_instead_of_crashing(spark):
     ).collect()
     assert rows[0].p == 0.0 and rows[0].q is not None
     assert 0.0 <= rows[1].p <= 1.0
-
-
-def test_token_chunks_rejects_gappy_stride(spark):
-    import pytest as _pytest
-
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm import terms as ltm
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="stride"):
-        ltm.token_chunks(df, chunk=4, stride=9)
-    with _pytest.raises(ValueError, match="stride"):
-        ltm.token_chunks_sql(chunk=4, stride=0)
 
 
 class TestGopherRules:

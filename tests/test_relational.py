@@ -41,10 +41,9 @@ def test_duplicate_rows_diagnostic(spark):
     assert [(r.id, r["count"]) for r in rows] == [(1, 2)]
 
 
-def test_drop_nulls_subset(spark):
+def test_drop_nulls_any_column(spark):
     df = _df(spark, [(1, None), (None, "b"), (2, "c")], "id int, v string")
     assert drop_nulls(df).count() == 1
-    assert drop_nulls(df, subset=["v"]).count() == 2
 
 
 def test_join_family(spark):
@@ -181,11 +180,6 @@ class TestConstraintChecks:
                     # k=9 is the only orphan (dbt convention: the
                     # NULL child key is ignored by default)
                     fk_violations(child, "k", parent, "pk", "fk"),
-                    # strict mode counts the NULL child too
-                    fk_violations(
-                        child, "k", parent, "pk", "fk_strict",
-                        ignore_nulls=False,
-                    ),
                     # 'z' outside list; NULL would not count
                     accepted_values_violations(
                         child, "v", ["a", "b", "c"], "av"
@@ -194,7 +188,7 @@ class TestConstraintChecks:
                 ]
             ).collect()
         }
-        assert rep == {"u": 2, "fk": 1, "fk_strict": 2, "av": 1, "nn": 1}
+        assert rep == {"u": 2, "fk": 1, "av": 1, "nn": 1}
 
     def test_clean_table_reports_zeroes(self, spark):
         from yelp_review_data_analysis_using_big_data_technologies_spark.operators.constraints import (

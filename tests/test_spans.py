@@ -17,19 +17,17 @@ from __future__ import annotations
 import random
 
 import duckdb
-import pytest
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.spans import SPAN_K as K
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.spans import dup_spans, dup_spans_sql
-
-K = 3
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id string, text string")
 
 
-def _spans(spark, rows, **kw):
-    out = dup_spans(_docs(spark, rows), k=kw.pop("k", K), **kw)
+def _spans(spark, rows):
+    out = dup_spans(_docs(spark, rows))
     return [
         (r.doc_id, r.span_start, r.span_end, r.span_tokens, r.n_dup_shingles)
         for r in out.collect()
@@ -79,7 +77,7 @@ def test_shared_passage_flagged_in_both_docs(spark):
 
 def test_within_doc_repeat_counts(spark):
     # the same k-run pasted twice in ONE document duplicates itself
-    run = "x y z w"
+    run = "x y z w v u"
     rows = [("solo", f"{run} filler one two three {run} tail")]
     got = _spans(spark, rows)
     assert got == _brute(rows)
@@ -87,7 +85,7 @@ def test_within_doc_repeat_counts(spark):
 
 
 def test_disjoint_regions_do_not_fuse(spark):
-    r1, r2 = "a b c d", "p q r s"
+    r1, r2 = "a b c d e f", "p q r s t u"
     gap = " ".join(f"u{i}" for i in range(10))
     rows = [
         ("x", f"{r1} {gap} {r2}"),
@@ -99,27 +97,20 @@ def test_disjoint_regions_do_not_fuse(spark):
 
 
 def test_short_docs_absent(spark):
-    rows = [("tiny", "one two"), ("null_text", None), ("a", "x y z x y z")]
+    rows = [("tiny", "one two"), ("null_text", None), ("a", "x y z w v x y z w v")]
     got = _spans(spark, rows)
     assert got == _brute([r for r in rows if r[1] is not None])
     assert all(g[0] == "a" for g in got)
 
 
 def test_null_ids_dropped(spark):
-    rows = [(None, "a b c a b c"), ("k", "d e f")]
+    rows = [(None, "a b c d e a b c d e"), ("k", "d e f")]
     assert _spans(spark, rows) == []
-
-
-def test_min_count_validation(spark):
-    with pytest.raises(ValueError, match="min_count"):
-        dup_spans(_docs(spark, [("a", "x")]), min_count=1)
-    with pytest.raises(ValueError, match="k must"):
-        dup_spans(_docs(spark, [("a", "x")]), k=0)
 
 
 def test_brute_force_randomized(spark):
     rng = random.Random(42)
-    vocab = [f"w{i}" for i in range(12)]  # small vocab → natural repeats
+    vocab = [f"w{i}" for i in range(3)]  # small vocab → natural repeats
     rows = [
         (f"d{i}", " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 30))))
         for i in range(25)
@@ -131,7 +122,7 @@ def test_twin_matches_brute_force(spark):
     """The DuckDB twin implements the same semantics (cheap local pin;
     the cross-engine hash equality runs in the sf0.01 gate)."""
     rng = random.Random(7)
-    vocab = [f"t{i}" for i in range(10)]
+    vocab = [f"t{i}" for i in range(3)]
     rows = [
         (f"d{i}", " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 25))))
         for i in range(15)
@@ -144,14 +135,14 @@ def test_twin_matches_brute_force(spark):
         [x for r in rows for x in r],
     )
     got = [
-        tuple(r) for r in con.execute(dup_spans_sql(k=K)).fetchall()
+        tuple(r) for r in con.execute(dup_spans_sql()).fetchall()
     ]
     assert got == _brute(rows)
 
 
 def test_partition_invariance(spark):
     rng = random.Random(3)
-    vocab = [f"w{i}" for i in range(8)]
+    vocab = [f"w{i}" for i in range(3)]
     rows = [
         (f"d{i}", " ".join(rng.choice(vocab) for _ in range(20)))
         for i in range(20)
@@ -160,7 +151,7 @@ def test_partition_invariance(spark):
     for parts in (1, 3, 17):
         df = _docs(spark, rows).repartition(parts)
         got = sorted(
-            tuple(r) for r in dup_spans(df, k=K).collect()
+            tuple(r) for r in dup_spans(df).collect()
         )
         if want is None:
             want = got
@@ -175,7 +166,7 @@ def test_partition_invariance(spark):
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.spans import remove_dup_spans, remove_dup_spans_sql
 
 
-def _brute_removed(rows, k=K, min_count=2, keep_first=True):
+def _brute_removed(rows, k=K, min_count=2):
     """Pure-python oracle for remove_dup_spans.  Tokenization must
     match the ENGINE tokenizer, which keeps empty edge tokens
     (``'' → ['']``, pinned in the r8 control-chars class) — bare
@@ -196,7 +187,7 @@ def _brute_removed(rows, k=K, min_count=2, keep_first=True):
         if len(lst) < min_count:
             continue
         lst = sorted(lst)
-        exempt = lst[0] if keep_first else None
+        exempt = lst[0]  # keep-first
         for d, p in lst:
             if (d, p) != exempt:
                 flagged[d].add(p)
@@ -229,8 +220,8 @@ def _brute_removed(rows, k=K, min_count=2, keep_first=True):
     return sorted(out)
 
 
-def _removed(spark, rows, **kw):
-    out = remove_dup_spans(_docs(spark, rows), k=kw.pop("k", K), **kw)
+def _removed(spark, rows):
+    out = remove_dup_spans(_docs(spark, rows))
     return sorted(
         (r.doc_id, r.clean_text, r.n_tokens, r.n_tokens_removed, r.n_spans_removed)
         for r in out.collect()
@@ -252,18 +243,6 @@ def test_removal_keep_first_protects_one_copy(spark):
     assert "p q r s t" not in by_id["b"][1]
 
 
-def test_removal_aggressive_excises_all_copies(spark):
-    shared = "p q r s t"
-    rows = [
-        ("a", f"head {shared} tail"),
-        ("b", f"other start {shared} other end"),
-    ]
-    got = _removed(spark, rows, keep_first=False)
-    assert got == _brute_removed(rows, keep_first=False)
-    for _, clean, _, _, _ in got:
-        assert "p q r s t" not in clean
-
-
 def test_removal_null_text_and_untouched_docs(spark):
     rows = [
         ("a", "x y z w v repeated x y z w v"),
@@ -279,20 +258,17 @@ def test_removal_null_text_and_untouched_docs(spark):
 
 def test_removal_brute_force_randomized(spark):
     rng = random.Random(11)
-    vocab = [f"w{i}" for i in range(10)]
+    vocab = [f"w{i}" for i in range(3)]
     rows = [
         (f"d{i}", " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 28))))
         for i in range(22)
     ]
     assert _removed(spark, rows) == _brute_removed(rows)
-    assert _removed(spark, rows, keep_first=False) == _brute_removed(
-        rows, keep_first=False
-    )
 
 
 def test_removal_twin_matches_brute_force(spark):
     rng = random.Random(13)
-    vocab = [f"t{i}" for i in range(8)]
+    vocab = [f"t{i}" for i in range(3)]
     rows = [
         (f"d{i}", " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 20))))
         for i in range(14)
@@ -304,13 +280,13 @@ def test_removal_twin_matches_brute_force(spark):
         + ") AS t(doc_id, text)",
         [x for r in rows for x in r],
     )
-    got = sorted(tuple(r) for r in con.execute(remove_dup_spans_sql(k=K)).fetchall())
+    got = sorted(tuple(r) for r in con.execute(remove_dup_spans_sql()).fetchall())
     assert got == _brute_removed(rows)
 
 
 def test_removal_partition_invariance(spark):
     rng = random.Random(17)
-    vocab = [f"w{i}" for i in range(7)]
+    vocab = [f"w{i}" for i in range(3)]
     rows = [
         (f"d{i}", " ".join(rng.choice(vocab) for _ in range(18)))
         for i in range(18)
@@ -319,9 +295,7 @@ def test_removal_partition_invariance(spark):
     for parts in (1, 3, 17):
         got = sorted(
             tuple(r)
-            for r in remove_dup_spans(
-                _docs(spark, rows).repartition(parts), k=K
-            ).collect()
+            for r in remove_dup_spans(_docs(spark, rows).repartition(parts)).collect()
         )
         if want is None:
             want = got

@@ -78,40 +78,6 @@ def test_available_now_jobs_carry_the_callers_job_tag(spark, smoke_dir):
     assert all("t_available_now_tag" in t for t in run.values()), run
 
 
-def test_append_mode_holds_back_open_windows(spark, tmp_path):
-    """Append mode only emits a window once the watermark passes its
-    end: feeding one batch of data leaves the trailing window(s) open
-    — the late-data policy in action."""
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [
-            (1, "2024-01-01 00:10:00", "click", 1.0),
-            (2, "2024-01-01 00:50:00", "click", 2.0),
-            (3, "2024-01-01 03:00:00", "click", 4.0),  # advances watermark
-        ],
-        "event_id long, ts_str string, event_type string, value double",
-    ).withColumn("ts", F.to_timestamp("ts_str"))
-    df.select("event_id", "ts", "event_type", "value").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(src))
-
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, event_type string, value double")
-        .parquet(str(src))
-    )
-    out = run_available_now(
-        tumbling_counts(stream, watermark="30 minutes"),
-        "t_append_watermark",
-        "append",
-    )
-    emitted = {str(r.window_start): r.n for r in out.collect()}
-    # watermark ends at 03:00 - 30min = 02:30 → the 00:00 window
-    # (end 01:00 <= 02:30) emits; the 03:00 window stays open.
-    assert emitted.get("2024-01-01 00:00:00") == 2
-    assert "2024-01-01 03:00:00" not in emitted
-
-
 def test_sliding_doubles_contributions(spark, smoke_dir, batch_events):
     """1h window / 30m slide: every event lands in exactly 2 windows,
     so total n across windows is 2x the event count; stream == batch."""
@@ -128,32 +94,6 @@ def test_sliding_doubles_contributions(spark, smoke_dir, batch_events):
     b = {key(r): (r.n, r.sum_value) for r in batch.collect()}
     assert s == b
     assert sum(n for n, _ in s.values()) == 2 * batch_events.count()
-
-
-def test_streaming_sessionize_matches_batch(spark, smoke_dir, batch_events):
-    """session_window sessionization over a stream (watermarked) must
-    reproduce the batch result under availableNow replay."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import sessionize
-
-    streamed = run_available_now(
-        sessionize(
-            stream_events(spark, smoke_dir), gap="30 minutes",
-            watermark="1 minute",
-        ),
-        "t_sessionize_stream",
-        "append",
-    )
-    batch = sessionize(batch_events, gap="30 minutes")
-    key = lambda r: (r.user_id, str(r.session_start))
-    s = {key(r): (r.n_events, r.sum_value, r.last_ts) for r in streamed.collect()}
-    b = {key(r): (r.n_events, r.sum_value, r.last_ts) for r in batch.collect()}
-    # append mode holds back sessions the watermark hasn't passed; with
-    # a 1-minute watermark over a finite replay everything closed
-    # except possibly each user's last open session
-    assert set(s) <= set(b)
-    assert len(s) >= len(b) - batch.select("user_id").distinct().count()
-    for k in s:
-        assert s[k] == b[k]
 
 
 def test_stream_stream_interval_join_matches_batch(spark, smoke_dir, batch_events):
@@ -341,28 +281,52 @@ def test_stream_increment_counts_partition_pruned_rewrite(spark, tmp_path):
     }
 
 
-def test_merge_sinks_distinguish_missing_from_unreadable():
-    """Bootstrap-vs-broken: only path-missing / schema-inference
-    failures may bootstrap; any other read failure must propagate so a
-    crash-corrupted view is never silently reinitialized from one
-    micro-batch."""
-    from pyspark.errors import AnalysisException
-
+def test_merge_sinks_distinguish_missing_from_unreadable(spark, tmp_path):
+    """Bootstrap-vs-broken: a missing path and a _SUCCESS-only
+    directory hold no table, so a sink may bootstrap there; a corrupt
+    part file IS a table, and a merge sink or an index erasure must
+    fail on it rather than reinitialize or skip it."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import (
+        delete_from_ivf_index,
+    )
+    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+        hadoop_table_exists,
+    )
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
-        _is_missing_table,
+        stream_merge_to_parquet,
     )
 
-    assert _is_missing_table(
-        AnalysisException("[PATH_NOT_FOUND] Path does not exist: /x")
-    )
-    assert _is_missing_table(
-        AnalysisException(
-            "[UNABLE_TO_INFER_SCHEMA] Unable to infer schema for Parquet"
+    assert not hadoop_table_exists(spark, str(tmp_path / "missing"))
+    success_only = tmp_path / "success_only"
+    success_only.mkdir()
+    (success_only / "_SUCCESS").write_bytes(b"")
+    assert not hadoop_table_exists(spark, str(success_only))
+
+    corrupt = tmp_path / "corrupt"
+    part = corrupt / "y=1" / "part-00000.parquet"
+    part.parent.mkdir(parents=True)
+    part.write_bytes(b"not a parquet file")
+    (corrupt / "_SUCCESS").write_bytes(b"")
+    assert hadoop_table_exists(spark, str(corrupt))
+
+    src = str(tmp_path / "src")
+    schema = "k long, y int, v string"
+    spark.createDataFrame([(1, 1, "a")], schema).write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    with pytest.raises(Exception):
+        stream_merge_to_parquet(
+            stream, str(corrupt), str(tmp_path / "ckpt"), keys=["k"], partition_by=["y"]
         )
-    )
-    assert not _is_missing_table(
-        AnalysisException("[UNRESOLVED_COLUMN] A column cannot be resolved")
-    )
+    # nothing bootstrapped over the unreadable table
+    assert part.read_bytes() == b"not a parquet file"
+
+    cell = tmp_path / "idx" / "cells" / "cell_id=0" / "part-00000.parquet"
+    cell.parent.mkdir(parents=True)
+    cell.write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        delete_from_ivf_index(
+            spark.createDataFrame([(1,)], "vec_id long"), str(tmp_path / "idx")
+        )
 
 
 def test_stream_dedup_ingest_sequential_admission(spark, tmp_path):
@@ -577,7 +541,7 @@ def test_stream_doc_dedup_equals_global_batch(spark, tmp_path):
         .filter(F.col("text").isNull() | (F.col("__rn") == 1))
         .select("doc_id")
     )
-    dropped = near_dup_pairs_banded(df, threshold=0.5).select(
+    dropped = near_dup_pairs_banded(df).select(
         F.col("id_b").alias("doc_id")
     )
     release_staging()

@@ -159,20 +159,15 @@ def test_cooccurrence_null_entity_or_item_drop(spark):
 
 
 def test_cooccurrence_fanout_cap_excises_entity(spark):
-    # user 9 holds 4 distinct items; cap 3 removes it from EVERY count
-    facts = _facts(
-        spark,
-        [(1, "a"), (1, "b"), (9, "a"), (9, "b"), (9, "c"), (9, "d")],
-    )
-    rows = cooccurrence_lift(facts, max_items_per_key=3).collect()
+    # user 9 holds FANOUT_CAP + 1 distinct items: the cap removes it
+    # from EVERY count
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.association import FANOUT_CAP
+
+    many = [(9, f"i{k:05d}") for k in range(FANOUT_CAP - 1)]
+    facts = _facts(spark, [(1, "a"), (1, "b"), (9, "a"), (9, "b")] + many)
+    rows = cooccurrence_lift(facts).collect()
     assert len(rows) == 1
     r = rows[0]
     assert (r.item_a, r.item_b) == ("a", "b")
     assert r.n_ab == 1 and r.n_a == 1 and r.n_b == 1
     assert r.support == 1.0  # entity universe shrank to user 1
-
-
-def test_cooccurrence_min_pair_filter(spark):
-    facts = _facts(spark, [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (3, "c")])
-    rows = cooccurrence_lift(facts, min_pair_n=2).collect()
-    assert [(r.item_a, r.item_b) for r in rows] == [("a", "b")]

@@ -3,9 +3,7 @@ tie order, cumulative coverage, and the NULL/truncation contracts on
 hand-computable corpora.
 """
 
-import pytest
-
-from yelp_review_data_analysis_using_big_data_technologies_spark.llm.terms import vocab_coverage
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.terms import VOCAB_TOP, vocab_coverage
 
 
 def _docs(spark, texts):
@@ -17,7 +15,7 @@ def _docs(spark, texts):
 def test_vocab_counts_and_coverage(spark):
     docs = _docs(spark, ["a a b", "a b c", "b"])
     # counts: a=3, b=3, c=1; total 7; tie a<b
-    rows = vocab_coverage(docs, v=3).collect()
+    rows = vocab_coverage(docs).collect()
     assert [(r.token, r.n, r.rk) for r in rows] == [
         ("a", 3, 1),
         ("b", 3, 2),
@@ -29,26 +27,24 @@ def test_vocab_counts_and_coverage(spark):
 
 
 def test_vocab_top_v_cuts_and_oov(spark):
-    docs = _docs(spark, ["x x x y y z"])
-    rows = vocab_coverage(docs, v=2).collect()
-    assert [r.token for r in rows] == ["x", "y"]
-    assert rows[-1].cum_cov == round(5 / 6, 6)  # OOV rate 1/6 at v=2
+    # 60 distinct tokens, t00 repeated 41 times: 100 tokens in all
+    words = [f"t{i:02d}" for i in range(60)] + ["t00"] * 40
+    rows = vocab_coverage(_docs(spark, [" ".join(words)])).collect()
+    assert VOCAB_TOP == 50
+    assert [r.token for r in rows] == [f"t{i:02d}" for i in range(50)]
+    assert rows[-1].cum_cov == 0.9  # OOV rate 1/10 at v=50
 
 
 def test_vocab_null_rows_drop(spark):
     docs = spark.createDataFrame(
         [(1, "a b"), (None, "zzz zzz"), (2, None)], "doc_id long, text string"
     )
-    rows = vocab_coverage(docs, v=10).collect()
+    rows = vocab_coverage(docs).collect()
     assert sorted(r.token for r in rows) == ["a", "b"]
 
 
 def test_vocab_v_larger_than_vocabulary(spark):
-    rows = vocab_coverage(_docs(spark, ["only two"]), v=50).collect()
+    rows = vocab_coverage(_docs(spark, ["only two"])).collect()
     assert len(rows) == 2
     assert rows[-1].cum_cov == 1.0
 
-
-def test_vocab_validation(spark):
-    with pytest.raises(ValueError):
-        vocab_coverage(_docs(spark, ["a"]), v=0)

@@ -8,7 +8,7 @@ Pins the Schleimer et al. guarantees the docstring promises:
   selections are far sparser than the shingle count;
 * leftmost-min tie rule, short-doc clamping, NULL contracts;
 * the df-capped pair join finds planted plagiarism and ignores
-  boilerplate-only overlap past max_df.
+  boilerplate-only overlap past WINNOW_MAX_DF.
 """
 
 from __future__ import annotations
@@ -18,20 +18,21 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.winnow import WINNOW_K as K
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.winnow import WINNOW_MAX_DF
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.winnow import WINNOW_W as W
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.winnow import (
     winnow_fingerprints,
     winnow_pairs,
 )
-
-K, W = 3, 4
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id LONG, text STRING")
 
 
-def _fps(spark, rows, **kw):
-    return winnow_fingerprints(_docs(spark, rows), k=K, w=W, **kw).collect()
+def _fps(spark, rows):
+    return winnow_fingerprints(_docs(spark, rows)).collect()
 
 
 def test_shared_long_run_shares_a_fingerprint(spark):
@@ -102,18 +103,22 @@ def test_pairs_find_planted_plagiarism(spark):
         (2, f"different intro {shared} different outro"),
         (3, "nothing in common with anyone here at all today friends"),
     ]
-    fps = winnow_fingerprints(_docs(spark, rows), k=K, w=W)
-    pairs = winnow_pairs(fps, min_shared=2).collect()
+    fps = winnow_fingerprints(_docs(spark, rows))
+    pairs = winnow_pairs(fps).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     assert pairs[0].n_shared >= 2
 
 
 def test_pairs_df_cap_drops_boilerplate_fingerprints(spark):
-    # the same snippet in EVERY doc is boilerplate: with max_df below
-    # the doc count none of its fingerprints may pair anything
-    snippet = "standard footer text appears in every single document here"
-    rows = [(i, f"doc {i} body {snippet}") for i in range(1, 7)]
-    fps = winnow_fingerprints(_docs(spark, rows), k=K, w=W)
-    assert winnow_pairs(fps, min_shared=1, max_df=3).collect() == []
-    # raising the cap re-admits them
-    assert winnow_pairs(fps, min_shared=1, max_df=10).count() > 0
+    # the same snippet in more than WINNOW_MAX_DF docs is boilerplate:
+    # none of its fingerprints may pair anything
+    snippet = (
+        "standard footer text appears in every single document here "
+        "please read our terms of service and privacy policy first"
+    )
+    rows = [(i, f"doc {i} body {snippet}") for i in range(1, WINNOW_MAX_DF + 2)]
+    fps = winnow_fingerprints(_docs(spark, rows))
+    assert winnow_pairs(fps).collect() == []
+    # below the cap the same snippet pairs two of them
+    two = winnow_fingerprints(_docs(spark, rows[:2]))
+    assert winnow_pairs(two).count() > 0

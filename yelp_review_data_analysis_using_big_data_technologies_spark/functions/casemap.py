@@ -14,7 +14,6 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import as_col as _as_col
 
 #: The reference's super-category keyword map, key-for-key and
 #: keyword-for-keyword (scripts/etl.py:63-74 = scripts/glue_job.py:50-61).
@@ -69,17 +68,13 @@ def first_match_category(
     return expr.otherwise(F.lit("Other"))
 
 
-def sentiment(
-    stars: Column | str,
-    negative_max: float = 2.0,
-    neutral: float = 3.0,
-) -> Column:
+def sentiment(stars: Column | str) -> Column:
     """Sentiment bucketing CASE (C1; reference scripts/etl.py:96-101):
     stars <= 2 → negative, == 3 → neutral, else positive."""
     c = F.col(stars) if isinstance(stars, str) else stars
     return (
-        F.when(c <= F.lit(negative_max), F.lit("negative"))
-        .when(c == F.lit(neutral), F.lit("neutral"))
+        F.when(c <= F.lit(2.0), F.lit("negative"))
+        .when(c == F.lit(3.0), F.lit("neutral"))
         .otherwise(F.lit("positive"))
     )
 
@@ -108,30 +103,22 @@ def bucketize(
     return F.lit(default) if expr is None else expr.otherwise(F.lit(default))
 
 
-def decode_map(
-    col: Column | str,
-    mapping: Mapping[str, str],
-    fallback: Column | str | None = None,
-) -> Column:
+def decode_map(col: Column | str, mapping: Mapping[str, str]) -> Column:
     """Key→value decode (C2; the reference's 27-branch state-name CASE,
     scripts/glue_job.py:85-115, with ``otherwise(col("state"))``
     pass-through).
 
     Implemented with a MAP literal + ``element_at`` — one constant-
     folded expression instead of 27 chained branches, and O(1) lookup.
-    ``fallback`` defaults to passing the input through unchanged, the
-    reference's behavior for unmapped states.
+    An unmapped key passes through unchanged, the reference's behavior
+    for unmapped states.
     """
     c = F.col(col) if isinstance(col, str) else col
-    if not mapping:
-        return c if fallback is None else _as_col(fallback)
     pairs: list[Column] = []
     for k, v in mapping.items():
         pairs.append(F.lit(k))
         pairs.append(F.lit(v))
-    lookup = F.element_at(F.create_map(*pairs), c)
-    fb = c if fallback is None else _as_col(fallback)
-    return F.coalesce(lookup, fb)
+    return F.coalesce(F.element_at(F.create_map(*pairs), c), c)
 
 
 

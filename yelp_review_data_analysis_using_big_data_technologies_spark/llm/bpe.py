@@ -52,6 +52,9 @@ __all__ = [
 #: the ``_TOK`` used by every other documents twin).
 _TOK_SQL = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
 
+#: Merge rounds learned and applied (the twins unroll the same count).
+MERGES = 6
+
 
 def _round(
     seq: DataFrame, step: int
@@ -169,8 +172,8 @@ def _round(
     return stats, nxt_seq.drop("sel")
 
 
-def bpe_merge_steps(df: DataFrame, k: int = 6) -> DataFrame:
-    """Learn ``k`` BPE merges over the whitespace token stream of
+def bpe_merge_steps(df: DataFrame) -> DataFrame:
+    """Learn ``MERGES`` BPE merges over the whitespace token stream of
     ``df`` and return the merge table with the post-merge stream
     accounting: one row per merge step ``(step, sym_a, sym_b,
     pair_count, n_merged, vocab_size, n_symbols)``, where
@@ -189,7 +192,7 @@ def bpe_merge_steps(df: DataFrame, k: int = 6) -> DataFrame:
         )
     )
     steps: list[DataFrame] = []
-    for i in range(1, k + 1):
+    for i in range(1, MERGES + 1):
         # _round eagerly checkpoints its output stream (lineage cut);
         # re-staging it here would only double-cache the same rows
         stats, seq = _round(seq, i)
@@ -257,8 +260,8 @@ def _round_sql(i: int) -> str:
 def bpe_merge_steps_sql() -> str:
     """DuckDB twin of :func:`bpe_merge_steps`: the K rounds unrolled
     as CTE blocks (deterministic ties pinned by the same ORDER BY)."""
-    blocks = ", ".join(_round_sql(i) for i in range(1, 7))
-    stats = " UNION ALL ".join(f"SELECT * FROM stat{i}" for i in range(1, 7))
+    blocks = ", ".join(_round_sql(i) for i in range(1, MERGES + 1))
+    stats = " UNION ALL ".join(f"SELECT * FROM stat{i}" for i in range(1, MERGES + 1))
     return (
         "WITH seq0 AS ("
         "  SELECT doc_id,"
@@ -271,8 +274,8 @@ def bpe_merge_steps_sql() -> str:
     )
 
 
-def bpe_encode_stats(df: DataFrame, k: int = 6) -> DataFrame:
-    """APPLY the ``k`` learned merges (r15 follow-on: the tokenizer
+def bpe_encode_stats(df: DataFrame) -> DataFrame:
+    """APPLY the ``MERGES`` learned merges (the tokenizer
     train → apply pair): re-runs the same deterministic merge rounds
     over ``df``'s token stream and reports the per-document encoding
     effect — ``(doc_id, n_before, n_after, ratio)``, whitespace
@@ -293,7 +296,7 @@ def bpe_encode_stats(df: DataFrame, k: int = 6) -> DataFrame:
         F.count(F.lit(1)).alias("n_before")
     )
     cur = seq
-    for i in range(1, k + 1):
+    for i in range(1, MERGES + 1):
         # checkpointed inside _round — no re-stage (see bpe_merge_steps)
         _stats, cur = _round(cur, i)
     after = cur.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_after"))
@@ -313,7 +316,7 @@ def bpe_encode_stats_sql() -> str:
     """DuckDB twin of :func:`bpe_encode_stats`: the SAME unrolled
     round blocks as :func:`bpe_merge_steps_sql`, aggregated per doc
     instead of per step."""
-    blocks = ", ".join(_round_sql(i) for i in range(1, 7))
+    blocks = ", ".join(_round_sql(i) for i in range(1, MERGES + 1))
     return (
         "WITH seq0 AS ("
         "  SELECT doc_id,"
@@ -323,7 +326,7 @@ def bpe_encode_stats_sql() -> str:
         "        WHERE text IS NOT NULL)"
         f"), {blocks}, "
         "__before AS (SELECT doc_id, count(*) AS n_before FROM seq0 GROUP BY doc_id), "
-        f"__after AS (SELECT doc_id, count(*) AS n_after FROM seq6 GROUP BY doc_id) "
+        f"__after AS (SELECT doc_id, count(*) AS n_after FROM seq{MERGES} GROUP BY doc_id) "
         "SELECT doc_id, n_before, n_after, "
         "round(n_after * 1.0 / n_before, 6) AS ratio "
         "FROM __before JOIN __after USING (doc_id) ORDER BY doc_id"

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Component label per node: ``(id, cluster_id)`` where
     ``cluster_id`` is the minimum node id reachable through ``pairs``.
     Only nodes that appear in at least one pair are emitted
@@ -49,16 +49,16 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     while a SQL GROUP BY would hand the NULL node its neighbor's label
     — no answer is right, so the input contract is non-NULL ids.
 
-    ``max_iter`` bounds the propagation; convergence is read from an
+    20 rounds bound the propagation; convergence is read from an
     ``observe`` metric folded into each round's one checkpoint job
     (sum of changed rows — no separate probe job), so well-formed
     inputs stop at diameter + 1 rounds regardless.  If the
-    budget exhausts with rows still changing (diameter > ``max_iter``
+    budget exhausts with rows still changing (diameter > 20
     — a long-chain graph, not the dense near-dup shape this targets)
     the labels are only PARTIALLY propagated, so that state raises
     ``RuntimeError`` instead of returning silently-wrong clusters;
-    either raise ``max_iter`` or switch to a large-star/small-star
-    formulation for such graphs.
+    switch to the large-star/small-star formulation
+    (:func:`connected_components_alternating`) for such graphs.
     """
     # NULL endpoints: see docstring — no label assignment is right
     pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
@@ -79,7 +79,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         .select("id", F.col("id").alias("lbl"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(20):
         nbr_min = (
             edges.join(
                 labels.select(
@@ -120,9 +120,9 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
             break
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
+            "connected_components did not converge in 20 "
             "iterations; labels are partially propagated (graph "
-            "diameter exceeds the budget — raise max_iter)"
+            "diameter exceeds the budget)"
         )
     return labels.select(
         F.col("id").alias("doc_id"), F.col("lbl").alias("cluster_id")
@@ -141,7 +141,7 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return (row.n, row.x if row.x is not None else 0)
 
 
-def connected_components_alternating(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
+def connected_components_alternating(pairs: DataFrame) -> DataFrame:
     """Connected components by alternating large-star/small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — same output contract as
@@ -161,7 +161,7 @@ def connected_components_alternating(pairs: DataFrame, max_iter: int = 30) -> Da
     Each round is two groupBy-join passes over the current edge set
     with ``localCheckpoint`` lineage truncation; convergence is an
     order-insensitive edge-set checksum (count + hash-xor), and
-    exhausting ``max_iter`` without a fixpoint raises rather than
+    exhausting 30 rounds without a fixpoint raises rather than
     returning a partially-contracted graph.
     """
     # NULL endpoints rejected — same contract as connected_components
@@ -179,7 +179,7 @@ def connected_components_alternating(pairs: DataFrame, max_iter: int = 30) -> Da
         .localCheckpoint(eager=True)
     )
     sig = _checksum(edges)
-    for _ in range(max_iter):
+    for _ in range(30):
         # large-star: center u sees its FULL neighborhood; every
         # strictly-larger neighbor re-points to m = min(N(u) ∪ {u}).
         sym = edges.unionAll(
@@ -225,8 +225,8 @@ def connected_components_alternating(pairs: DataFrame, max_iter: int = 30) -> Da
             break
     else:
         raise RuntimeError(
-            f"connected_components_alternating did not converge in "
-            f"{max_iter} rounds (expected O(log^2 n)); edge set still "
+            "connected_components_alternating did not converge in "
+            "30 rounds (expected O(log^2 n)); edge set still "
             "changing"
         )
     # Fixpoint edge set is a disjoint union of stars rooted at the

@@ -4,7 +4,7 @@ pipeline" tier).
 Training corpora must not contain the evaluation benchmarks the
 resulting model is scored on; the standard defense is n-gram-overlap
 decontamination: a corpus document is CONTAMINATED when it shares at
-least ``min_shared`` distinct word n-grams with the benchmark set.
+least two distinct word n-grams with the benchmark set.
 (The reference analytics pipeline has no analog — this extends the
 engine's dedup family, reusing its shingling:
 ``llm/text.py::shingled``.)
@@ -39,12 +39,8 @@ from pyspark.sql import functions as F
 from .text import shingled
 
 
-def contamination_overlap(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    min_shared: int = 2,
-) -> DataFrame:
-    """(doc_id, n_shared) for corpus docs sharing ≥ ``min_shared``
+def contamination_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """(doc_id, n_shared) for corpus docs sharing ≥ 2
     distinct 3-grams with ANY benchmark text.  The
     benchmark's distinct-shingle fingerprint is broadcast — the corpus
     is filtered map-side and only matched postings reach the one
@@ -54,11 +50,11 @@ def contamination_overlap(
     # keep_cols=[] — the benchmark side needs only text (an eval-suite
     # fingerprint frame has no reason to carry the corpus' id column)
     bench_sh = (
-        shingled(benchmark, [], "text", 3, out="__sh")
+        shingled(benchmark, [])
         .select(F.explode(F.col("__sh")).alias("__s"))
         .distinct()
     )
-    corpus_sh = shingled(corpus, ["doc_id"], "text", 3, out="__sh").select(
+    corpus_sh = shingled(corpus, ["doc_id"]).select(
         F.col("doc_id"),
         F.explode(F.array_distinct(F.col("__sh"))).alias("__s"),
     )
@@ -66,7 +62,7 @@ def contamination_overlap(
         corpus_sh.join(F.broadcast(bench_sh), on="__s")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 2)
     )
 
 

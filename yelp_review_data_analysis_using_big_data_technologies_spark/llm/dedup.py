@@ -59,6 +59,10 @@ THRESHOLD = 0.5
 #: in more documents than this are boilerplate and are dropped.
 MAX_DF = 1000
 
+#: Band-bucket population above which :func:`band_bucket_profile`
+#: (and its twin) reports a bucket as an oversize near-dup clique.
+OVERSIZE_BUCKET = 1000
+
 
 def content_hash(text: Column | str) -> Column:
     """Stable content key: ``sha2(text, 256)`` (lowercase hex in both
@@ -112,66 +116,53 @@ def jaccard_rounded(sh_a, sz_a, sh_b, sz_b):
     return F.round(i / (sz_a + sz_b - i), 6)
 
 
-def _banded_keys(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-) -> tuple[DataFrame, DataFrame]:
+def _banded_keys(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared LSH staging for the self-join and the delta-vs-corpus
-    join: returns ``(base, band_keys)`` where ``base`` is the staged
-    ``(__id, __sh, __sz)`` shingle-set relation (empty-shingle docs
-    dropped — they can never verify and their all-NULL band keys
-    collide quadratically) and ``band_keys`` is the exploded
-    ``(__id, band_key)`` relation."""
-    rows = num_hashes // BANDS
-    assert rows * BANDS == num_hashes, "bands must divide num_hashes"
+    join over ``(doc_id, text)``: returns ``(base, band_keys)`` where
+    ``base`` is the staged ``(__id, __sh, __sz)`` shingle-set relation
+    (empty-shingle docs dropped — they can never verify and their
+    all-NULL band keys collide quadratically) and ``band_keys`` is the
+    exploded ``(__id, band_key)`` relation."""
     # ``spread`` the narrow (id, text) source first: off a one-row-group
     # scan the shingle+signature build otherwise runs as a single task
     # (measured 5.8 s of the 5.9 s query at sf0.1) — and a bare
     # repartition doesn't help because the size>0 filter pushdown drags
     # the computing projection back below the exchange.  No-op at
     # warehouse scale (input splits already ≥ cluster parallelism).
-    src = spread(df.select(F.col(id_col), F.col(text_col)))
+    src = spread(df.select("doc_id", "text"))
     base = stage(
-        shingled(src, [id_col], text_col, SHINGLE_N, out="__sh0")
+        shingled(src, ["doc_id"], n=SHINGLE_N, out="__sh0")
         .select(
-            F.col(id_col).alias("__id"),
+            F.col("doc_id").alias("__id"),
             F.array_distinct(F.col("__sh0")).alias("__sh"),
         )
         .filter(F.size("__sh") > 0)
-        .withColumn("__sig", minhash_signature_from(F.col("__sh"), num_hashes))
+        .withColumn("__sig", minhash_signature_from(F.col("__sh"), NUM_HASHES))
         .withColumn("__sz", F.size("__sh"))
     )
     band_keys = base.select(
         "__id",
         F.explode(
-            band_key_array(F.col("__sig"), num_hashes, BANDS)
+            band_key_array(F.col("__sig"), NUM_HASHES, BANDS)
         ).alias("band_key"),
     )
     return base, band_keys
 
 
-def near_dup_pairs_banded(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = NUM_HASHES,
-    threshold: float = THRESHOLD,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Banded MinHash LSH near-duplicate pair join.
+def near_dup_pairs_banded(df: DataFrame) -> DataFrame:
+    """Banded MinHash LSH near-duplicate pair join over
+    ``(doc_id, text)``.
 
     1. Per doc: distinct word ``SHINGLE_N``-gram shingles + a
-       ``num_hashes``-wide MinHash signature over them.
-    2. Split the signature into ``BANDS`` bands of ``num_hashes //
+       ``NUM_HASHES``-wide MinHash signature over them.
+    2. Split the signature into ``BANDS`` bands of ``NUM_HASHES //
        BANDS`` rows; each band hashes to a bucket key.  Probability a
        pair shares ≥1 band ≈ 1-(1-J^r)^b — the classic S-curve.
     3. Self-join on the band key (shuffle partitioned by bucket — the
        only join, and it only ever compares within-bucket docs; no
        all-pairs crossJoin at any scale).
     4. Verify candidates with EXACT Jaccard over the shingle sets and
-       keep pairs ≥ ``threshold``.
+       keep pairs ≥ ``THRESHOLD``.
 
     Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b``.
 
@@ -181,33 +172,17 @@ def near_dup_pairs_banded(
     where a large fraction of docs is ONE near-dup clique (same
     template, tiny edits — exact-dedup-proof) degrades to clique²
     candidate pairs no matter how the buckets are keyed; that is a
-    property of PAIR ENUMERATION, not of this plan.  ``max_bucket``
-    is the ngram ``max_df``-style mitigation: band buckets holding
-    more than that many docs are dropped before the self-join
-    (mirrored in the SQL twin), bounding candidates at
-    ``Σ min(bucket, max_bucket)²``.  Dropped buckets are giant
-    near-dup cliques by construction — at scale you do not want
-    their Θ(clique²) pairs; route them to
-    :func:`band_bucket_profile` for detection and collapse them with
-    exact/representative dedup instead.  Default ``None`` (off)
-    keeps pair-complete semantics for corpora known to be
-    boilerplate-light (the clean-pipeline entries run exact dedup
-    first, which removes the worst case).
+    property of PAIR ENUMERATION, not of this plan.  The join is
+    pair-complete: :func:`band_bucket_profile` detects the regime
+    before the join runs, and the clean-pipeline entries run exact
+    dedup first, which removes the worst case.
     """
     # Shingles/signatures build ONCE and persist via the staging
     # registry (callers release after materialization): the plan
     # references the staged relation three times (band explode + both
     # verification sides); at warehouse scale it's a staging table.
-    base, band_keys = _banded_keys(df, id_col, text_col, num_hashes)
-    if max_bucket is not None:
-        kept = (
-            band_keys.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") <= max_bucket)
-            .select("band_key")
-        )
-        band_keys = band_keys.join(kept, on="band_key")
-    return verified_pairs_from(base, band_keys, threshold)
+    base, band_keys = _banded_keys(df)
+    return verified_pairs_from(base, band_keys, THRESHOLD)
 
 
 def verified_pairs_from(
@@ -283,8 +258,8 @@ def dedup_against_corpus(corpus: DataFrame, delta: DataFrame) -> DataFrame:
         .drop("__h")
     )
 
-    cbase, ckeys = _banded_keys(corpus, "doc_id", "text", NUM_HASHES)
-    dbase, dkeys = _banded_keys(delta, "doc_id", "text", NUM_HASHES)
+    cbase, ckeys = _banded_keys(corpus)
+    dbase, dkeys = _banded_keys(delta)
     matched = match_banded_candidates(
         dbase, dkeys, cbase, ckeys, "doc_id", THRESHOLD
     )
@@ -333,35 +308,19 @@ def match_banded_candidates(
     )
 
 
-def _jaccard_postings(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int
-) -> DataFrame:
-    """Staged raw ``(__id, __s)`` distinct-shingle postings — the
-    shared tokenization leg of the base/prefix/auto Jaccard joins (the
-    auto dispatcher builds it ONCE and hands it to whichever plan the
-    profile picks, so regime selection never re-tokenizes)."""
+def _jaccard_postings(df: DataFrame) -> DataFrame:
+    """Staged raw ``(__id, __s)`` distinct-shingle postings of
+    ``(doc_id, text)`` — the shared tokenization leg of the self and
+    cross-corpus Jaccard joins."""
     return stage(
-        shingled(
-            spread(df.select(F.col(id_col), F.col(text_col))),
-            [id_col],
-            text_col,
-            shingle_n,
-            out="__sh0",
-        ).select(
-            F.col(id_col).alias("__id"),
+        shingled(spread(df.select("doc_id", "text")), ["doc_id"], n=SHINGLE_N, out="__sh0").select(
+            F.col("doc_id").alias("__id"),
             F.explode(F.array_distinct(F.col("__sh0"))).alias("__s"),
         )
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | None = MAX_DF,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted shingle
     index — the deterministic complement to the probabilistic MinHash
     band join.
@@ -371,12 +330,11 @@ def ngram_jaccard_pairs(
     is only ever compared if it shares one), count shared shingles per
     pair, and compute ``J = |A∩B| / (|A|+|B|-|A∩B|)`` from
     pre-aggregated set sizes.  Candidate work is Σ posting-list², so
-    ``max_df`` drops shingles appearing in more than that many docs —
+    ``MAX_DF`` drops shingles appearing in more than that many docs —
     boilerplate shingles both blow up the join quadratically and carry
     no near-dup signal (a pair sharing ONLY ultra-common shingles is
-    not a near-duplicate).  With ``max_df`` set, sizes and Jaccard are
-    computed over the retained shingle space (documented, mirrored in
-    the SQL twin).
+    not a near-duplicate).  Sizes and Jaccard are computed over the
+    retained shingle space (mirrored in the SQL twin).
     """
     # Persist the RAW postings before anything touches them (via the
     # staging registry — callers release after materialization): the
@@ -384,21 +342,20 @@ def ngram_jaccard_pairs(
     # aggregate, both sides of the self-join, the size aggregate) and
     # re-tokenizing the corpus per reference dominates runtime.  At
     # warehouse scale this is a staging table.
-    sh = _jaccard_postings(df, id_col, text_col, shingle_n)
-    if max_df is not None:
-        kept = (
-            sh.groupBy("__s")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("__s")
-        )
-        # Stage the FILTERED postings too (r16 opt, guide §1.2): the
-        # plan reads them three times (size aggregate + both self-join
-        # sides), and each un-staged reference re-runs the df
-        # aggregate + the retain join over the cached raw postings —
-        # planned-time exchange reuse does not dedup them (38
-        # InMemoryTableScans in the before-plan).  Rows identical.
-        sh = stage(sh.join(kept, on="__s"))
+    sh = _jaccard_postings(df)
+    kept = (
+        sh.groupBy("__s")
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .filter(F.col("__df") <= MAX_DF)
+        .select("__s")
+    )
+    # Stage the FILTERED postings too: the
+    # plan reads them three times (size aggregate + both self-join
+    # sides), and each un-staged reference re-runs the df
+    # aggregate + the retain join over the cached raw postings —
+    # planned-time exchange reuse does not dedup them (38
+    # InMemoryTableScans in the before-plan).  Rows identical.
+    sh = stage(sh.join(kept, on="__s"))
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__sz"))
     shared = (
         sh.alias("a")
@@ -480,8 +437,8 @@ def ngram_jaccard_join(
     documented semantics.  No id ordering constraint: the sides are
     different corpora (the same id may legitimately appear in both),
     so every qualifying (left, right) pair is emitted once."""
-    shl = _jaccard_postings(left, "doc_id", "text", SHINGLE_N)
-    shr = _jaccard_postings(right, "doc_id", "text", SHINGLE_N)
+    shl = _jaccard_postings(left)
+    shr = _jaccard_postings(right)
     kept = (
         shl.select("__s")
         .unionAll(shr.select("__s"))
@@ -584,7 +541,6 @@ def simhash_buckets(df: DataFrame) -> DataFrame:
     hashed = with_simhash_words(
         spread(df.filter(F.col("text").isNotNull()).select(F.col("text"))),
         [],
-        "text",
         n_words=1,
     ).select(F.col("__w")[0].alias("simhash"))
     return hashed.groupBy("simhash").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -686,7 +642,6 @@ def simhash_words_sql(text_expr: str) -> str:
 def with_simhash_words(
     df: DataFrame,
     keep_cols: list[str],
-    text_col: str = "text",
     n_words: int = SIMHASH_WORDS,
 ) -> DataFrame:
     """Corpus-scale staged SimHash: tokenize and md5 ONCE per token in
@@ -695,11 +650,12 @@ def with_simhash_words(
     lambdas would re-hash every token once per word, the same
     subexpression-elimination trap as ``llm.text.shingled``), then
     derive each word from the bound hash column with cheap hex
-    arithmetic.  Returns ``keep_cols`` + the ``__w`` word array —
+    arithmetic.  Returns ``keep_cols`` + the ``__w`` word array of
+    ``text`` —
     same values as :func:`simhash_words`, one md5 pass instead of
     ``n_words``."""
     tok, hcol, ncol = "__tk_sh", "__h_sh", "__n_sh"
-    staged = df.select(*keep_cols, tokens(text_col).alias(tok))
+    staged = df.select(*keep_cols, tokens("text").alias(tok))
     hashed = staged.select(
         *keep_cols,
         F.transform(tok, F.md5).alias(hcol),
@@ -734,21 +690,16 @@ def with_simhash_words(
     return hashed.select(*keep_cols, F.array(*words).alias("__w"))
 
 
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_words: int = SIMHASH_WORDS,
-) -> DataFrame:
-    """SimHash near-duplicate pairs with Hamming-band candidate
-    generation — real near-dups differ by a few BITS, so exact-value
-    grouping (:func:`simhash_buckets`) misses them.
+def simhash_near_dup_pairs(df: DataFrame) -> DataFrame:
+    """SimHash near-duplicate pairs of ``(doc_id, text)`` with
+    Hamming-band candidate generation — real near-dups differ by a few
+    BITS, so exact-value grouping (:func:`simhash_buckets`) misses
+    them.
 
-    1. 64-bit SimHash per doc as ``n_words`` 16-bit words.
+    1. 64-bit SimHash per doc as ``SIMHASH_WORDS`` (4) 16-bit words.
     2. Band explode: (word_index, word_value) keys.  Pigeonhole: any
-       pair within Hamming distance ``n_words - 1`` agrees exactly on
-       at least one word, so recall is EXACT for
-       a Hamming cut of 3 whenever ``n_words >= 4``.
+       pair within Hamming distance 3 agrees exactly on at least one
+       of the 4 words, so recall is EXACT for the Hamming cut of 3.
     3. Self-join on the band key (shuffle key = the band — candidates
        only ever compare within a band bucket, no all-pairs).
     4. Verify with the exact Hamming distance
@@ -763,21 +714,14 @@ def simhash_near_dup_pairs(
     ``coalesce`` folds every NULL doc to words ``[0 × 4]`` → one giant
     Hamming-0 clique (caught by tests/test_null_injection.py).
     """
-    assert n_words >= 4, "banded recall is only exact for Hamming 3 <= n_words - 1"
     # Staged hash (one md5 pass) + staging-registry persist: the plan
     # references this relation three times (band explode + both sides
     # of the Hamming verification join).
     base = stage(
         with_simhash_words(
-            spread(
-                df.select(F.col(id_col), F.col(text_col)).filter(
-                    F.col(text_col).isNotNull()
-                )
-            ),
-            [id_col],
-            text_col,
-            n_words,
-        ).select(F.col(id_col).alias("__id"), F.col("__w"))
+            spread(df.select("doc_id", "text").filter(F.col("text").isNotNull())),
+            ["doc_id"],
+        ).select(F.col("doc_id").alias("__id"), F.col("__w"))
     )
     bands = base.select(
         "__id",
@@ -849,14 +793,9 @@ def near_dup_removal(df: DataFrame) -> DataFrame:
     return df.join(losers, on="doc_id", how="left_anti")
 
 
-def prefix_contained(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    block_chars: int = 1,
-) -> DataFrame:
+def prefix_contained(df: DataFrame) -> DataFrame:
     """Prefix-containment dedup (the cheap exact-substring class): every
-    doc whose FULL text is a prefix of another doc — truncated
+    ``(doc_id, text)`` doc whose FULL text is a prefix of another doc — truncated
     re-crawls, paginated shards, streaming cut-offs.  Returns
     ``(id, container_id)`` where the doc's text is a prefix of (or
     equal to) the container's.
@@ -866,7 +805,7 @@ def prefix_contained(
     SOMETHING iff A's IMMEDIATE SUCCESSOR in text order starts with A.
     One sorted-neighborhood window, no pair join, no index:
 
-    - window PARTITION BY the first ``block_chars`` chars (a nonempty
+    - window PARTITION BY the first char (a nonempty
       A and any B starting with A share them, so the global successor
       is in A's block whenever it matters; a cross-block successor
       cannot start with A) and ORDER BY (text, id) — the id tiebreak
@@ -880,24 +819,19 @@ def prefix_contained(
       everything, which is quality filtering's job, not dedup's.
 
     At 100 TB: shuffle key = the text block; one-char blocking keeps
-    correctness with ~alphabet-size partitions, so for real corpora
-    raise ``block_chars`` (docs shorter than the block are a bounded
-    short-doc side handled by exact dedup) — documented dial, same
-    trade-off family as the ngram df-cap."""
+    correctness with ~alphabet-size partitions."""
     from pyspark.sql import Window
 
-    win = Window.partitionBy(
-        F.substring(F.col(text_col), 1, block_chars)
-    ).orderBy(text_col, id_col)
-    base = df.filter(
-        F.col(text_col).isNotNull() & (F.col(text_col) != "")
-    ).select(F.col(id_col), F.col(text_col))
+    win = Window.partitionBy(F.substring("text", 1, 1)).orderBy("text", "doc_id")
+    base = df.filter(F.col("text").isNotNull() & (F.col("text") != "")).select(
+        "doc_id", "text"
+    )
     return (
-        base.withColumn("__next_text", F.lead(text_col).over(win))
-        .withColumn("__next_id", F.lead(id_col).over(win))
-        .filter(F.col("__next_text").startswith(F.col(text_col)))
+        base.withColumn("__next_text", F.lead("text").over(win))
+        .withColumn("__next_id", F.lead("doc_id").over(win))
+        .filter(F.col("__next_text").startswith(F.col("text")))
         .select(
-            F.col(id_col).alias("contained_id"),
+            F.col("doc_id").alias("contained_id"),
             F.col("__next_id").alias("container_id"),
         )
         .orderBy("contained_id")
@@ -926,32 +860,26 @@ ORDER BY contained_id
 """
 
 
-def band_bucket_profile(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 6,
-    max_bucket: int = 1000,
-) -> DataFrame:
+def band_bucket_profile(df: DataFrame) -> DataFrame:
     """Degenerate-clique diagnostic for :func:`near_dup_pairs_banded`:
     one row profiling the band-bucket population — total buckets, the
     largest bucket, total within-bucket candidate pairs
     (Σ n·(n-1)/2, the self-join's actual work), buckets above
-    ``max_bucket``, and the candidate pairs those oversize buckets
+    ``OVERSIZE_BUCKET``, and the candidate pairs those oversize buckets
     would contribute.  An ingest pipeline runs this BEFORE the pair
     join: ``oversize_buckets > 0`` means the corpus is in the
-    boilerplate-clique regime and the capped join (or
-    representative-dedup of the flagged buckets) is the right plan.
+    boilerplate-clique regime and representative-dedup of the flagged
+    buckets is the right plan.
     Aggregation is a single partial-agg pass over the band keys —
     no join, safe at any corpus size."""
-    _, band_keys = _banded_keys(df, id_col, text_col, num_hashes)
+    _, band_keys = _banded_keys(df)
     per_bucket = band_keys.groupBy("band_key").agg(
         F.count(F.lit(1)).alias("__bn")
     )
     # n·(n-1) is even, so integer DIV is exact (and stays in long —
     # `/` would detour through double)
     pairs = F.expr("__bn * (__bn - 1) DIV 2")
-    oversize = F.col("__bn") > max_bucket
+    oversize = F.col("__bn") > OVERSIZE_BUCKET
     return per_bucket.agg(
         F.count(F.lit(1)).alias("n_buckets"),
         F.max("__bn").alias("max_bucket_size"),
@@ -1004,19 +932,18 @@ SELECT CAST(count(*) AS BIGINT) AS n_buckets,
        CAST(max(bn) AS BIGINT) AS max_bucket_size,
        CAST(sum(bn * (bn - 1) // 2) AS BIGINT)
          AS candidate_pairs,
-       CAST(sum(CASE WHEN bn > 1000 THEN 1 ELSE 0 END) AS BIGINT)
+       CAST(sum(CASE WHEN bn > {OVERSIZE_BUCKET} THEN 1 ELSE 0 END) AS BIGINT)
          AS oversize_buckets,
-       CAST(sum(CASE WHEN bn > 1000
+       CAST(sum(CASE WHEN bn > {OVERSIZE_BUCKET}
                 THEN bn * (bn - 1) // 2 ELSE 0 END) AS BIGINT)
          AS oversize_pairs
 FROM per_bucket
 """
 
 
-def near_dup_banded_sql(table: str = "documents", max_bucket: int | None = None) -> str:
+def near_dup_banded_sql(table: str = "documents") -> str:
     """DuckDB twin of :func:`near_dup_pairs_banded`, generated from the
-    same band/hash constants so candidate buckets and Jaccard agree
-    (including the ``max_bucket`` oversize-bucket cut when set)."""
+    same band/hash constants so candidate buckets and Jaccard agree."""
     rows = NUM_HASHES // BANDS
     gram = ", ".join(f"t[i+{j + 1}]" for j in range(SHINGLE_N))
     sig_entries = ",\n    ".join(
@@ -1029,12 +956,6 @@ def near_dup_banded_sql(table: str = "documents", max_bucket: int | None = None)
             parts=", ".join(f"g[{b * rows + r + 1}]" for r in range(rows)),
         )
         for b in range(BANDS)
-    )
-    bucket_cut = (
-        " WHERE band_key IN (SELECT band_key FROM bands0 "
-        f"GROUP BY band_key HAVING count(*) <= {max_bucket})"
-        if max_bucket is not None
-        else ""
     )
     return f"""
 WITH tok AS (
@@ -1055,7 +976,7 @@ WITH tok AS (
     {band_entries}]) AS band_key
   FROM sig
 ), bands AS (
-  SELECT * FROM bands0{bucket_cut}
+  SELECT * FROM bands0
 ), cands AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM bands a JOIN bands b USING (band_key)
@@ -1089,7 +1010,7 @@ def near_dup_pairs_ml(df: DataFrame) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     sh = (
-        shingled(df, ["doc_id"], "text", 3, out="__sh0")
+        shingled(df, ["doc_id"], out="__sh0")
         .select(
             F.col("doc_id").alias("__id"),
             F.array_distinct(F.col("__sh0")).alias("__sh"),
@@ -1119,24 +1040,19 @@ def near_dup_pairs_ml(df: DataFrame) -> DataFrame:
     )
 
 
-def line_dedup(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_len: int = 20,
-    drop_hashes: DataFrame | None = None,
-) -> DataFrame:
-    """Corpus-wide LINE/paragraph dedup (public reference: the CCNet
+def line_dedup(df: DataFrame, drop_hashes: DataFrame | None = None) -> DataFrame:
+    """Corpus-wide LINE/paragraph dedup of ``(doc_id, text)`` (public
+    reference: the CCNet
     paragraph-hash dedup, Wenzek et al. arXiv:1911.00359 §3.1, and
     C4's duplicate-span removal, Raffel et al. arXiv:1910.10683
-    §2.2): every line of length ≥ ``min_len`` may appear ONCE in the
+    §2.2): every line of length ≥ 20 may appear ONCE in the
     whole corpus — the first occurrence in ``(doc_id, line_pos)``
     order survives, every other copy is dropped, and each document is
     reassembled from its surviving lines in original order.  This is
     the boilerplate killer (nav bars, cookie banners, license
     headers) that document-level dedup cannot touch.
 
-    Short lines (< ``min_len`` chars) are always kept: blank
+    Short lines (< 20 chars) are always kept: blank
     separators and one-word lines repeat legitimately, and deduping
     them corpus-wide would tear the formatting out of every document
     after the first.
@@ -1160,13 +1076,13 @@ def line_dedup(
     ``array_sort``.  Survivor = global (id, pos) minimum, so the
     result is partition-layout independent."""
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), F.lit("\n"))).alias(
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), F.lit("\n"))).alias(
             "__pos", "__line"
         ),
     )
-    elig = lines.filter(F.length("__line") >= min_len).select(
-        id_col,
+    elig = lines.filter(F.length("__line") >= 20).select(
+        "doc_id",
         "__pos",
         F.sha2(F.col("__line"), 256).alias("__h"),
     )
@@ -1180,26 +1096,26 @@ def line_dedup(
             F.col(drop_hashes.columns[0]).alias("__h")
         ).distinct()
         seen_drops = elig.join(dh, on="__h", how="left_semi").select(
-            id_col, "__pos"
+            "doc_id", "__pos"
         )
         elig = elig.join(dh, on="__h", how="left_anti")
     winners = elig.groupBy("__h").agg(
-        F.min(F.struct(F.col(id_col), F.col("__pos"))).alias("__w")
+        F.min(F.struct(F.col("doc_id"), F.col("__pos"))).alias("__w")
     )
     drops = (
         elig.join(winners, on="__h")
         .filter(
             ~(
-                (F.col(id_col) == F.col("__w")[id_col])
+                (F.col("doc_id") == F.col("__w")["doc_id"])
                 & (F.col("__pos") == F.col("__w.__pos"))
             )
         )
-        .select(id_col, "__pos")
+        .select("doc_id", "__pos")
     )
     if seen_drops is not None:
         drops = drops.unionByName(seen_drops)
-    kept = lines.join(drops, on=[id_col, "__pos"], how="left_anti")
-    reassembled = kept.groupBy(id_col).agg(
+    kept = lines.join(drops, on=["doc_id", "__pos"], how="left_anti")
+    reassembled = kept.groupBy("doc_id").agg(
         F.concat_ws(
             "\n",
             F.transform(
@@ -1212,13 +1128,13 @@ def line_dedup(
         F.count(F.lit(1)).alias("n_kept"),
     )
     base = df.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), F.lit("\n"))).alias("__nl"),
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), F.lit("\n"))).alias("__nl"),
     )
     return (
-        base.join(reassembled, on=id_col, how="left")
+        base.join(reassembled, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             "clean_text",
             F.coalesce(F.col("n_kept"), F.lit(0)).alias("n_kept"),
             (

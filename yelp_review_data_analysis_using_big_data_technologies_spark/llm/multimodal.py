@@ -6,24 +6,13 @@ feature extraction, resizing, frame sampling) runs as Arrow-batched
 ``mapInPandas`` — the ONLY place Python touches rows, and it touches
 them a columnar batch at a time, partition-parallel.
 
-``decode=`` selects the decoder:
-
-- ``"fake"`` — a deterministic, content-derived stand-in used by
-  tests and the driver's correctness check (the SQL oracle can
-  reproduce it).
-- ``"real"`` — a dependency-free header parser for the image formats
-  whose dimensions sit at fixed offsets (PNG IHDR, GIF logical
-  screen, BMP DIB header) or behind a marker walk (JPEG SOFn), plus
-  WAV audio (RIFF chunk walk: frame count = data-chunk bytes /
-  fmt-chunk block-align).  Formats that genuinely require a codec
-  library (compressed audio, video streams) raise
-  ``NotImplementedError`` at the decode site with the library
-  contract documented.
+The decoder is a deterministic, content-derived stand-in for a codec
+(the SQL oracle can reproduce it); a real codec would plug in at the
+same ``mapInPandas`` site.
 """
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -43,124 +32,6 @@ MEDIA_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def parse_image_dimensions(payload: bytes) -> tuple[int, int] | None:
-    """Pure-Python (width, height) from the container header of the
-    header-parseable image formats; ``None`` when the payload is not
-    one of them.
-
-    - PNG: 8-byte signature, then the IHDR chunk — width/height are
-      big-endian u32 at byte offsets 16/20.
-    - GIF (87a/89a): logical screen width/height, little-endian u16 at
-      offsets 6/8.
-    - BMP: 'BM' + BITMAPINFOHEADER — width/height are little-endian
-      i32 at offsets 18/22 (height may be negative for top-down rows).
-    - JPEG: walk the marker segments to the first SOFn frame header;
-      height/width are big-endian u16 at SOF payload offsets 3/5.
-    """
-    if len(payload) >= 24 and payload[:8] == b"\x89PNG\r\n\x1a\n":
-        w, h = struct.unpack(">II", payload[16:24])
-        return (int(w), int(h))
-    if len(payload) >= 10 and payload[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack("<HH", payload[6:10])
-        return (int(w), int(h))
-    if len(payload) >= 26 and payload[:2] == b"BM":
-        # i32 width/height at 18/22 holds for BITMAPINFOHEADER (DIB
-        # size >= 40); the OS/2 BITMAPCOREHEADER (size 12) stores u16
-        # fields there — reading i32 would fuse width|height into
-        # garbage, so unsupported DIBs return None (-> the honest
-        # NotImplementedError) instead of silent corruption.
-        dib = struct.unpack("<I", payload[14:18])[0]
-        if dib < 40:
-            return None
-        w, h = struct.unpack("<ii", payload[18:26])
-        return (int(w), abs(int(h)))
-    if len(payload) >= 4 and payload[:2] == b"\xff\xd8":
-        pos = 2
-        while pos + 9 <= len(payload):
-            if payload[pos] != 0xFF:
-                return None
-            # spec-legal 0xFF fill/padding bytes may precede a marker;
-            # treating one as the marker itself would read a bogus
-            # segment length and walk off the buffer
-            while pos + 9 <= len(payload) and payload[pos + 1] == 0xFF:
-                pos += 1
-            if pos + 9 > len(payload):
-                # a fill run reaching the buffer tail leaves no room
-                # for marker + length + SOF dims — truncated file;
-                # None, not a struct.error from a short unpack
-                return None
-            marker = payload[pos + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                pos += 2  # standalone markers carry no length
-                continue
-            seg_len = struct.unpack(">H", payload[pos + 2 : pos + 4])[0]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h, w = struct.unpack(">HH", payload[pos + 5 : pos + 9])
-                return (int(w), int(h))
-            pos += 2 + seg_len
-        return None
-    return None
-
-
-def parse_wav_frames(payload: bytes) -> tuple[int, int, int] | None:
-    """Pure-Python (n_channels, sample_rate, n_frames) from a RIFF/WAVE
-    container; ``None`` when the payload is not a WAV file.
-
-    Chunk walk: 'RIFF' + size + 'WAVE' header, then (id, u32-LE size)
-    chunks.  The ``fmt `` chunk carries channels (u16 @ +2), sample
-    rate (u32 @ +4) and block-align = bytes per sample frame (u16 @
-    +12); frame count = data-chunk byte length / block-align — plain
-    header arithmetic, no codec.  Chunks are word-aligned (odd sizes
-    pad one byte).
-    """
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    pos, fmt, data_size = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = struct.unpack("<I", payload[pos + 4 : pos + 8])[0]
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            channels, rate = struct.unpack("<HI", body[2:8])
-            block_align = struct.unpack("<H", body[12:14])[0]
-            fmt = (channels, rate, block_align)
-        elif cid == b"data":
-            data_size = min(size, len(payload) - pos - 8)
-        pos += 8 + size + (size & 1)
-    if fmt is None or data_size is None or fmt[2] == 0:
-        return None
-    return (fmt[0], fmt[1], data_size // fmt[2])
-
-
-def _real_decode(
-    payload: bytes, media_type: str | None
-) -> tuple[int | None, int | None, int]:
-    """Header-parse decode for images (width, height, 1 frame) and WAV
-    audio (null dims, frame count); explicit NotImplementedError for
-    media that requires an actual codec library."""
-    if media_type == "audio":
-        wav = parse_wav_frames(payload)
-        if wav is None:
-            raise NotImplementedError(
-                "payload is not an uncompressed RIFF/WAVE file; compressed "
-                "audio (mp3/ogg/flac) frame counts require soundfile"
-            )
-        return (None, None, wav[2])
-    if media_type not in (None, "image"):
-        raise NotImplementedError(
-            f"real decode for media_type={media_type!r} requires a codec "
-            "library (pyav for video stream dims) — plug it in per "
-            "media_type here"
-        )
-    dims = parse_image_dimensions(payload)
-    if dims is None:
-        raise NotImplementedError(
-            "payload is not a header-parseable image (PNG/GIF/BMP/JPEG); "
-            "decoding compressed/exotic containers requires Pillow"
-        )
-    return (dims[0], dims[1], 1)
-
-
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     """Deterministic stand-in for a codec: derives (width, height,
     n_frames) purely from the byte length so Spark and the SQL oracle
@@ -169,7 +40,7 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return (n % 64 + 1, n // 64 + 1, n % 16 + 1)
 
 
-def extract_features(media: DataFrame, decode: str = "fake") -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + feature-extract every media item.
 
     ``mapInPandas`` streams Arrow batches through one Python worker per
@@ -177,32 +48,9 @@ def extract_features(media: DataFrame, decode: str = "fake") -> DataFrame:
     declared up front so downstream plans stay fully typed.  The
     decode itself is the stub described in the module docstring.
     """
-    if decode not in ("fake", "real"):
-        raise ValueError(f"decode must be 'fake' or 'real', got {decode!r}")
-
     def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if decode == "real":
-                metas = pdf["meta"] if "meta" in pdf else [None] * len(pdf)
-                # NULL payload is MISSING data, not undecodable codec
-                # content: it yields NULL features instead of the
-                # honest NotImplementedError reserved for real bytes
-                # no header parser understands (which must still kill
-                # the job loudly rather than fabricate).
-                feats = [
-                    (None, None, None)
-                    if p is None
-                    else _real_decode(
-                        p,
-                        (m or {}).get("media_type") if m is not None else None,
-                    )
-                    for p, m in zip(pdf["payload"], metas)
-                ]
-            else:
-                feats = [
-                    _fake_decode(p if p is not None else b"")
-                    for p in pdf["payload"]
-                ]
+            feats = [_fake_decode(p if p is not None else b"") for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -232,14 +80,13 @@ def documents_as_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def sample_frames(media: DataFrame, n_samples: int = 4) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video-shaped media: one output row per
-    sampled frame, frames chosen evenly across the item's frame count
+    sampled frame, 4 frames chosen evenly across the item's frame count
     (deterministic — index ``i`` samples frame
-    ``floor(i * n_frames / n_samples)``).
+    ``floor(i * n_frames / 4)``).
 
-    The frame COUNT comes from the decode step (fake: content-derived;
-    real: codec metadata), and the expansion runs JVM-side as a
+    The frame COUNT comes from the decode step, and the expansion runs JVM-side as a
     ``posexplode`` over a generated index array — the Python boundary
     is only the per-item decode, never the row fan-out.  When several
     sample slots land on the same frame (more samples than frames)
@@ -250,17 +97,11 @@ def sample_frames(media: DataFrame, n_samples: int = 4) -> DataFrame:
     replace the byte-range annotation with a codec call in the same
     mapInPandas shape as :func:`extract_features`.
     """
-    if n_samples < 1:
-        raise ValueError(
-            f"n_samples must be >= 1, got {n_samples} (sequence(0, "
-            "n_samples-1) would auto-step BACKWARD for 0 and the "
-            "frame-index division would hit ANSI DIVIDE_BY_ZERO)"
-        )
     feats = extract_features(media).select("media_id", "n_frames")
     # explode, not posexplode: over sequence(0, n-1) the position IS
     # the element, so one exploded column serves as both sample index
     # and the numerator of the even-coverage division
-    idx = F.sequence(F.lit(0), F.lit(n_samples - 1))
+    idx = F.sequence(F.lit(0), F.lit(3))
     sampled = feats.select(
         "media_id",
         "n_frames",
@@ -268,7 +109,7 @@ def sample_frames(media: DataFrame, n_samples: int = 4) -> DataFrame:
     ).select(
         "media_id",
         "sample_idx",
-        F.floor(F.col("sample_idx") * F.col("n_frames") / n_samples)
+        F.floor(F.col("sample_idx") * F.col("n_frames") / 4)
         .cast("int")
         .alias("frame_idx"),
         "n_frames",

@@ -23,57 +23,40 @@ this is part of the §2.12 training-data surface.
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Unicode normalization forms pandas/unicodedata accept.
-FORMS = ("NFC", "NFD", "NFKC", "NFKD")
 
-_UDFS: dict[str, object] = {}
+@functools.cache
+def _nfc():
+    """The Arrow-batched NFC UDF, created once (udf creation is not free)."""
 
+    @F.pandas_udf("string")
+    def _norm(s: pd.Series) -> pd.Series:
+        # Series.str.normalize propagates nulls; empty strings are
+        # identity.
+        return s.str.normalize("NFC")
 
-def _normalizer(form: str):
-    """One cached Arrow-batched UDF per form (udf creation is not free)."""
-    if form not in FORMS:
-        raise ValueError(f"form must be one of {FORMS}, got {form!r}")
-    if form not in _UDFS:
-
-        @F.pandas_udf("string")
-        def _norm(s: pd.Series) -> pd.Series:
-            # Series.str.normalize propagates nulls; empty strings are
-            # identity under every form.
-            return s.str.normalize(form)
-
-        _UDFS[form] = _norm
-    return _UDFS[form]
+    return _norm
 
 
-def normalize_text_col(col: Column | str, form: str = "NFC") -> Column:
-    """Column expression: ``col`` normalized to ``form``."""
-    return _normalizer(form)(F.col(col) if isinstance(col, str) else col)
+def normalize_text(df: DataFrame, flag_col: str | None = None) -> DataFrame:
+    """Normalize ``df["text"]`` in place to NFC, the web's canonical
+    form (the ingest contract: downstream sees only normalized bytes).
 
-
-def normalize_text(
-    df: DataFrame,
-    form: str = "NFC",
-    out_col: str | None = None,
-    flag_col: str | None = None,
-) -> DataFrame:
-    """Normalize ``df["text"]`` to ``form`` (default NFC, the web's
-    canonical form).
-
-    ``out_col`` defaults to replacing ``text`` in place (the ingest
-    contract: downstream sees only normalized bytes).  ``flag_col``,
-    if given, adds a boolean marking rows the normalization actually
-    changed — the audit column an ingest job writes so the (tiny)
-    changed slice can be re-checked without re-scanning the corpus.
+    ``flag_col``, if given, adds a boolean marking rows the
+    normalization actually changed — the audit column an ingest job
+    writes so the (tiny) changed slice can be re-checked without
+    re-scanning the corpus.
     """
     tmp = "__normalize_text_tmp"
-    res = df.withColumn(tmp, normalize_text_col("text", form))
+    res = df.withColumn(tmp, _nfc()(F.col("text")))
     if flag_col is not None:
         # flag against the PRE-normalization bytes (null text → False)
         res = res.withColumn(
             flag_col, F.coalesce(F.col(tmp) != F.col("text"), F.lit(False))
         )
-    return res.withColumn(out_col or "text", F.col(tmp)).drop(tmp)
+    return res.withColumn("text", F.col(tmp)).drop(tmp)

@@ -2,14 +2,14 @@
 
 LLM training consumes fixed-size token windows; feeding one short
 document per window wastes most of the context, so pipelines PACK
-documents back-to-back into bins of ``budget`` tokens ("sample
+documents back-to-back into bins of ``BUDGET`` tokens ("sample
 packing").  The assignment here is the deterministic streaming rule:
 
-    bin(doc) = exclusive_prefix_tokens(doc) div budget
+    bin(doc) = exclusive_prefix_tokens(doc) div BUDGET
 
 over the corpus in ``id`` order — doc d lands in the bin its running
 token offset falls in.  A document may straddle a boundary (its bin is
-where it STARTS; bins can exceed ``budget`` by at most one document's
+where it STARTS; bins can exceed ``BUDGET`` by at most one document's
 tokens — the standard greedy contiguous pack, and the reason training
 loaders carry per-bin overflow handling).
 
@@ -18,12 +18,11 @@ The interesting part at scale is the PREFIX SUM.  A single
 one task — the textbook non-scalable plan.  This module computes the
 same integers with the classic two-level decomposition:
 
-1. bucket docs by ``id div bucket_size`` (a pure projection);
-2. per-bucket token subtotals (partial-agg, |corpus|/bucket_size rows);
+1. bucket docs by ``id div 4096`` (a pure projection);
+2. per-bucket token subtotals (partial-agg, |corpus|/4096 rows);
 3. EXCLUSIVE running offsets over the small subtotal relation (one
-   window over n/bucket_size rows — bounded by choosing
-   ``bucket_size`` so this fits one task; recurse the same trick if a
-   corpus ever outgrows it);
+   window over n/4096 rows — it fits one task; recurse the same
+   trick if a corpus ever outgrows it);
 4. per-bucket exclusive prefix windows (partitioned by bucket —
    embarrassingly parallel) + the bucket offset.
 
@@ -40,13 +39,14 @@ from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.text import token_count
 
+#: Tokens per packing bin (the twin divides by the same value).
+BUDGET = 512
+
 
 def pack_bins(
     docs: DataFrame,
-    budget: int = 512,
     id_col: str = "doc_id",
     tokens_col: str | None = None,
-    bucket_size: int = 4096,
 ) -> DataFrame:
     """Assign every document a packing ``bin_id`` and its token
     ``offset_tokens`` (exclusive prefix sum) under the greedy
@@ -73,11 +73,11 @@ def pack_bins(
     d = docs.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col),
         n.alias("n_tokens"),
-        F.expr(f"{id_col} div {bucket_size}").alias("__bkt"),
+        F.expr(f"{id_col} div 4096").alias("__bkt"),
     )
     # per-bucket subtotals -> exclusive running bucket offsets (the
     # ONLY ordered-window-over-everything, and it runs over the
-    # n/bucket_size-row subtotal relation, not the corpus).  Spark
+    # n/4096-row subtotal relation, not the corpus).  Spark
     # logs "WindowExec: No Partition Defined" for this window every
     # run — EXPECTED and bounded: the single task sees one row per
     # 4096 docs, not the corpus (a 1e9-doc corpus -> ~244k subtotal
@@ -109,7 +109,7 @@ def pack_bins(
             F.col("__off")
             + F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0).cast("bigint")),
         )
-        .withColumn("bin_id", F.expr(f"offset_tokens div {budget}"))
+        .withColumn("bin_id", F.expr(f"offset_tokens div {BUDGET}"))
         .select(id_col, "n_tokens", "offset_tokens", "bin_id")
     )
 
@@ -118,7 +118,7 @@ def pack_bins_sql() -> str:
     """DuckDB twin of :func:`pack_bins` — the NAIVE single-window
     prefix sum, so the oracle simultaneously checks the two-level
     decomposition against the textbook form."""
-    return """
+    return f"""
 WITH __d AS (
   -- NULL ids are not packable (r8 contract; matches the Spark plan)
   SELECT doc_id AS doc_id, CAST(len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')) AS BIGINT) AS n_tokens
@@ -135,6 +135,6 @@ WITH __d AS (
   FROM __d
 )
 SELECT doc_id, n_tokens, offset_tokens,
-       CAST(offset_tokens // 512 AS BIGINT) AS bin_id
+       CAST(offset_tokens // {BUDGET} AS BIGINT) AS bin_id
 FROM __c ORDER BY doc_id
 """

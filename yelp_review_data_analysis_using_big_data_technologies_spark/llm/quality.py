@@ -68,7 +68,7 @@ def repetition_profile(df: DataFrame) -> DataFrame:
     # ``shingles_from_tokens`` under both size() calls materializes
     # every row's n-gram array twice (verified in the physical plan).
     gram_stats = base.select(
-        "doc_id", shingles_from_tokens("__t", 3).alias("__g")
+        "doc_id", shingles_from_tokens("__t").alias("__g")
     ).select(
         "doc_id",
         F.size("__g").alias("__gt"),

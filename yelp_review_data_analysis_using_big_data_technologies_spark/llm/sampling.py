@@ -33,12 +33,12 @@ the stratified filter into the scan.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Default train/val/test weights.
+#: The train/val/test weights.
 DEFAULT_SPLITS: tuple[tuple[str, float], ...] = (
     ("train", 0.8),
     ("val", 0.1),
@@ -66,6 +66,10 @@ MIXTURE_SALT = "|mix"
 _U32_SPAN = 4294967296.0
 
 _HEX_DIGITS = "0123456789abcdef"
+
+#: Semantic clusters :func:`cluster_balance_sample` (and its twin)
+#: balances token mass across.
+BALANCE_CELLS = 8
 
 
 def hash_bucket(id_col: Column | str, salt: str = "") -> Column:
@@ -97,16 +101,16 @@ def _frac_hex(frac: float) -> str:
     return "g" * 8 if n >= _HEX_SPAN else format(n, "08x")
 
 
-def _thresholds(splits: Sequence[tuple[str, float]]) -> list[tuple[str, str]]:
-    """(name, cumulative-upper-bound-as-8-hex) per split; the last
-    split takes everything remaining so weight rounding can't drop
-    rows."""
-    total = sum(w for _, w in splits)
+def _thresholds() -> list[tuple[str, str]]:
+    """(name, cumulative-upper-bound-as-8-hex) per ``DEFAULT_SPLITS``
+    entry; the last split takes everything remaining so weight
+    rounding can't drop rows."""
+    total = sum(w for _, w in DEFAULT_SPLITS)
     out, cum = [], 0.0
-    for name, w in splits[:-1]:
+    for name, w in DEFAULT_SPLITS[:-1]:
         cum += w / total
         out.append((name, _frac_hex(cum)))
-    out.append((splits[-1][0], "g" * 8))
+    out.append((DEFAULT_SPLITS[-1][0], "g" * 8))
     return out
 
 
@@ -125,7 +129,7 @@ def split_assign(df: DataFrame) -> DataFrame:
     missing-rows signal."""
     b = hash_bucket("doc_id", SPLIT_SALT)
     expr = None
-    for name, thr in _thresholds(DEFAULT_SPLITS):
+    for name, thr in _thresholds():
         cond = b < F.lit(thr)
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     return df.withColumn("split", expr)
@@ -137,7 +141,7 @@ def split_case_sql() -> str:
     b = hash_bucket_sql("doc_id", SPLIT_SALT)
     whens = " ".join(
         f"WHEN {b} < '{thr}' THEN '{name}'"
-        for name, thr in _thresholds(DEFAULT_SPLITS)
+        for name, thr in _thresholds()
     )
     return f"(CASE {whens} END)"
 
@@ -543,17 +547,16 @@ WHERE {b} < __mx.__thr
 
 def mixture_report_sql(
     weights: Mapping[str, float],
-    table: str = "documents",
     domain_expr: str = "source",
     tokens_expr: str = "n_chars",
 ) -> str:
-    """DuckDB twin of :func:`mixture_report` — same salt, same
+    """DuckDB twin of :func:`mixture_report` over ``documents`` — same salt, same
     in-engine rate derivation (weights rendered via :func:`_fmt_double`
     so both engines hold the identical doubles), same hex-threshold
     clamp."""
     b = hash_bucket_sql("d.__id", MIXTURE_SALT)
     return f"""
-WITH {_mixture_threshold_ctes(weights, table, domain_expr, tokens_expr)}, __k AS (
+WITH {_mixture_threshold_ctes(weights, "documents", domain_expr, tokens_expr)}, __k AS (
   SELECT d.domain, COUNT(*) AS kept_docs,
          CAST(SUM(d.__tok) AS BIGINT) AS kept_tokens
   FROM __d d JOIN __h h USING (domain)
@@ -572,26 +575,19 @@ ORDER BY h.domain
 """
 
 
-def corpus_shuffle(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    seed: int = 42,
-    n_shards: int = 4,
-    prefix_chars: int = 2,
-) -> DataFrame:
-    """Deterministic global TRAINING ORDER → ``(id, position, shard)``:
-    the reproducible shuffle every training run needs — the same seed
-    gives the same permutation on any cluster size, a different seed
-    an (effectively) independent one, with no ``rand()`` and no shared
-    state.  ``position`` is the rank of ``md5(seed:id)`` over the
-    corpus (0-based, dense); ``shard`` = ``position % n_shards`` is
-    the round-robin worker assignment, so shards interleave the
+def corpus_shuffle(docs: DataFrame) -> DataFrame:
+    """Deterministic global TRAINING ORDER → ``(doc_id, position,
+    shard)``: the reproducible shuffle every training run needs — the
+    same permutation on any cluster size, with no ``rand()`` and no
+    shared state.  ``position`` is the rank of ``md5(42:id)`` over the
+    corpus (0-based, dense); ``shard`` = ``position % 4`` is the
+    round-robin worker assignment, so shards interleave the
     permutation instead of each taking a contiguous (hash-biased)
     slab.
 
     Scale shape: the permutation key IS the hash, so bucketing by its
-    first ``prefix_chars`` hex chars (256 buckets at the default)
-    aligns bucket order with global order — the classic two-level
+    first 2 hex chars (256 buckets) aligns bucket order with global
+    order — the classic two-level
     rank: per-bucket counts → exclusive running offsets over the
     ≤16^prefix-row subtotal relation (the only global window, bounded
     by construction), per-bucket ``row_number`` parallel over buckets,
@@ -604,17 +600,11 @@ def corpus_shuffle(
     duplicate ids share a hash and tie-break on the id itself, so
     full-row duplicates get adjacent, deterministic positions.
     """
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1, got {n_shards}")
-    if not (1 <= prefix_chars <= 8):
-        raise ValueError(f"prefix_chars must be in 1..8, got {prefix_chars}")
-    sid = F.col(id_col)
-    key = F.md5(
-        F.concat(F.lit(str(seed)), F.lit(":"), sid.cast("string"))
-    )
+    sid = F.col("doc_id")
+    key = F.md5(F.concat(F.lit("42:"), sid.cast("string")))
     d = docs.filter(sid.isNotNull()).select(
         sid, key.alias("__key")
-    ).withColumn("__bkt", F.substring("__key", 1, prefix_chars))
+    ).withColumn("__bkt", F.substring("__key", 1, 2))
     per_bucket = d.groupBy("__bkt").agg(F.count(F.lit(1)).alias("__n"))
     from pyspark.sql import Window
 
@@ -627,7 +617,7 @@ def corpus_shuffle(
             F.sum("__n").over(w_buckets), F.lit(0).cast("bigint")
         ).alias("__off"),
     )
-    w_in = Window.partitionBy("__bkt").orderBy("__key", id_col)
+    w_in = Window.partitionBy("__bkt").orderBy("__key", "doc_id")
     return (
         d.join(offsets, on="__bkt")
         .select(
@@ -637,7 +627,7 @@ def corpus_shuffle(
             ).alias("position"),
         )
         .withColumn(
-            "shard", F.pmod(F.col("position"), F.lit(n_shards)).cast("int")
+            "shard", F.pmod(F.col("position"), F.lit(4)).cast("int")
         )
     )
 
@@ -657,23 +647,19 @@ WHERE doc_id IS NOT NULL
 """
 
 
-def cluster_balance_sample(
-    df: DataFrame,
-    embeddings: DataFrame,
-    n_cells: int = 8,
-) -> DataFrame:
+def cluster_balance_sample(df: DataFrame, embeddings: DataFrame) -> DataFrame:
     """Semantic cluster-balanced curation (r15, the r14 verdict's #5 —
     the SemDeDup / cluster-curation shape): assign every document to
     its nearest frozen-seed centroid in EMBEDDING space
     (``llm.vectors.seed_centroids`` — the same deterministic
     quantizer the IVF index family shares with its SQL twin), then
-    rebalance token mass EVENLY across the ``n_cells`` semantic
+    rebalance token mass EVENLY across the ``BALANCE_CELLS`` semantic
     clusters with the :func:`mixture_sample` machinery (domain =
     cluster id): every cluster downsamples to the smallest cluster's
     token total, so one dominant topic cannot swamp the freeze the
     way one dominant language can't under the lang mixture.
 
-    Distributed shape: centroids are an ``n_cells``-row driver
+    Distributed shape: centroids are a ``BALANCE_CELLS``-row
     literal broadcast into a map-side nearest-cell projection; the
     doc↔cluster attach is one id equi-join; membership is the usual
     |clusters|-row broadcast threshold compare — no corpus-wide
@@ -694,14 +680,14 @@ def cluster_balance_sample(
         norm(vcast).alias("__n"),
     )
     cent_rows = _collect_centroids(
-        seed_centroids(embeddings, n_cells)
+        seed_centroids(embeddings, BALANCE_CELLS)
     )
     assigned = _assign_cells_literal(corpus, cent_rows).select(
         F.col("vec_id").alias("doc_id"),
         F.col("cell_id").cast("string").alias("cluster_id"),
     )
     tagged = df.join(assigned, on="doc_id")
-    weights = {str(c): 1.0 / n_cells for c in range(n_cells)}
+    weights = {str(c): 1.0 / BALANCE_CELLS for c in range(BALANCE_CELLS)}
     return mixture_sample(
         tagged,
         weights,
@@ -713,13 +699,13 @@ def cluster_balance_sample(
 def cluster_balance_sample_sql(table: str, cols: str = "*") -> str:
     """DuckDB twin of :func:`cluster_balance_sample` over a named
     relation ``table`` carrying ``doc_id`` rows: the SHARED seeded
-    centroid/assignment SQL of the IVF twins (the 8 smallest
+    centroid/assignment SQL of the IVF twins (the ``BALANCE_CELLS`` smallest
     vec_ids as centroids, nearest-cell by cosine with the (sim DESC,
     cell_id) tie-break) feeding :func:`mixture_sample_sql` with the
     cluster id as the mixture domain."""
     from .vectors import VEC_OK_SQL
 
-    weights = {str(c): 1.0 / 8 for c in range(8)}
+    weights = {str(c): 1.0 / BALANCE_CELLS for c in range(BALANCE_CELLS)}
     member = mixture_sample_sql(
         weights,
         table="__tagged",
@@ -732,7 +718,7 @@ WITH __cents AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell_id,
          CAST(embedding AS DOUBLE[]) AS cv
   FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT 8)
+        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT {BALANCE_CELLS})
 ), __emb AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   WHERE {VEC_OK_SQL}

@@ -9,7 +9,7 @@ that also occurs elsewhere in the corpus (or again in the same
 document)?  The suffix-array construction of the paper is inherently
 sequential; the distributed k-gram relaxation is standard: a token
 position is *duplicated* iff the ``k``-gram starting there occurs at
-least ``min_count`` times corpus-wide, and maximal runs of duplicated
+least twice corpus-wide, and maximal runs of duplicated
 positions merge into spans.  Every exact repeat of length ≥ k tokens
 is caught (its every k-window repeats); nothing shorter than k can
 flag a position — so spans approximate the suffix-array answer at
@@ -30,7 +30,7 @@ Plan shape (the 100-TB story):
 
 No all-pairs stage anywhere; within-doc state is O(doc length).
 
-Occurrence semantics: ``min_count`` counts OCCURRENCES, not documents
+Occurrence semantics: the threshold counts OCCURRENCES, not documents
 — a passage pasted twice into one document is a duplicate span too,
 matching the suffix-array semantics (the corpus repeats the bytes,
 regardless of where).
@@ -45,63 +45,46 @@ from .staging import spread, stage
 from .text import shingled, tokens
 from .winnow import _TOK_SQL, _shingle_sql
 
+#: Span k-gram width: every exact repeat of >= ``SPAN_K`` tokens is
+#: caught (the twins unroll the same width).
+SPAN_K = 5
 
-def dup_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    min_count: int = 2,
-) -> DataFrame:
-    """Merged duplicated-passage spans →
-    ``(id_col, span_start, span_end, span_tokens, n_dup_shingles)``
+
+def dup_spans(df: DataFrame) -> DataFrame:
+    """Merged duplicated-passage spans of ``(doc_id, text)`` →
+    ``(doc_id, span_start, span_end, span_tokens, n_dup_shingles)``
     with token-index spans, ``span_end`` exclusive.
 
-    Adjacent or overlapping duplicated k-grams merge into one span
-    (gap rule: positions ``p`` and ``p'`` belong to one span iff
-    ``p' - p <= k``, i.e. their windows overlap or touch — touching
-    runs are contiguous duplicated text).  Documents with fewer than
-    ``k`` tokens produce no shingles and are absent; NULL ids are not
-    attributable and are dropped (the pack_bins/winnow contract).
+    Adjacent or overlapping duplicated k-grams (``k = SPAN_K``) merge
+    into one span (gap rule: positions ``p`` and ``p'`` belong to one
+    span iff ``p' - p <= k``, i.e. their windows overlap or touch —
+    touching runs are contiguous duplicated text).  Documents with
+    fewer than ``k`` tokens produce no shingles and are absent; NULL
+    ids are not attributable and are dropped (the pack_bins/winnow
+    contract).
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if min_count < 2:
-        raise ValueError(
-            f"min_count must be >= 2 (1 would flag every position), "
-            f"got {min_count}"
-        )
-    flagged = _flagged_positions(
-        df, id_col, text_col, k, min_count, keep_first=False
-    )
+    flagged = _flagged_positions(df, keep_first=False)
     return (
-        _merge_islands(flagged, id_col, k)
+        _merge_islands(flagged)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start")).alias("span_tokens"),
             "n_dup_shingles",
         )
-        .orderBy(id_col, "span_start")
+        .orderBy("doc_id", "span_start")
     )
 
 
-def _flagged_positions(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int,
-    min_count: int,
-    keep_first: bool,
-) -> DataFrame:
-    """Token positions whose k-gram is corpus-duplicated →
-    ``(id_col, __p)``.  With ``keep_first`` the globally FIRST
+def _flagged_positions(df: DataFrame, keep_first: bool) -> DataFrame:
+    """Token positions whose k-gram occurs at least twice corpus-wide →
+    ``(doc_id, __p)``.  With ``keep_first`` the globally FIRST
     occurrence of each duplicated shingle (smallest ``(id, pos)``) is
     exempt — the removal contract that leaves one copy of the bytes in
     the corpus, mirroring the repo's keep-first line-dedup rule."""
-    sid = F.col(id_col)
-    sh = spread(shingled(df.where(sid.isNotNull()), [id_col], text_col, n=k))
+    sid = F.col("doc_id")
+    sh = spread(shingled(df.where(sid.isNotNull()), ["doc_id"], n=SPAN_K))
     # one row per token position; staged because both the occurrence
     # count and the join-back reference it (without the persist the
     # tokenizer pipeline executes twice)
@@ -117,7 +100,7 @@ def _flagged_positions(
     if keep_first:
         agg.append(F.min(F.struct(sid.alias("i"), F.col("__p").alias("p"))).alias("__first"))
     dup = (
-        pos_sh.groupBy("__h").agg(*agg).where(F.col("__occ") >= min_count)
+        pos_sh.groupBy("__h").agg(*agg).where(F.col("__occ") >= 2)
     )
     flagged = pos_sh.join(dup, "__h")
     if keep_first:
@@ -127,51 +110,42 @@ def _flagged_positions(
     return flagged.select(sid, "__p")
 
 
-def _merge_islands(flagged: DataFrame, id_col: str, k: int) -> DataFrame:
+def _merge_islands(flagged: DataFrame) -> DataFrame:
     """Gaps-and-islands merge of flagged positions →
-    ``(id_col, span_start, span_end, n_dup_shingles)`` with
+    ``(doc_id, span_start, span_end, n_dup_shingles)`` with
     ``span_end`` exclusive; positions ``p, p'`` fuse iff
-    ``p' - p <= k`` (windows overlap or touch)."""
-    w_ord = Window.partitionBy(id_col).orderBy("__p")
+    ``p' - p <= SPAN_K`` (windows overlap or touch)."""
+    w_ord = Window.partitionBy("doc_id").orderBy("__p")
     run = w_ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     islands = flagged.withColumn(
         "__brk",
         F.when(
             F.lag("__p").over(w_ord).isNull()
-            | (F.col("__p") - F.lag("__p").over(w_ord) > k),
+            | (F.col("__p") - F.lag("__p").over(w_ord) > SPAN_K),
             F.lit(1),
         ).otherwise(F.lit(0)),
     ).withColumn("__isl", F.sum("__brk").over(run))
-    return islands.groupBy(F.col(id_col), F.col("__isl")).agg(
+    return islands.groupBy(F.col("doc_id"), F.col("__isl")).agg(
         F.min("__p").alias("span_start"),
-        (F.max("__p") + k).alias("span_end"),
+        (F.max("__p") + SPAN_K).alias("span_end"),
         F.count(F.lit(1)).alias("n_dup_shingles"),
     )
 
 
-def remove_dup_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    min_count: int = 2,
-    keep_first: bool = True,
-) -> DataFrame:
+def remove_dup_spans(df: DataFrame) -> DataFrame:
     """The REMEDIATION half of substring dedup (Lee et al. 2022 cut
     the duplicated byte ranges out of the corpus; this is the k-gram
-    relaxation): excise duplicated-passage spans from each document →
-    ``(id_col, clean_text, n_tokens, n_tokens_removed,
-    n_spans_removed)``.
+    relaxation): excise duplicated-passage spans from each
+    ``(doc_id, text)`` document → ``(doc_id, clean_text, n_tokens,
+    n_tokens_removed, n_spans_removed)``.
 
-    ``keep_first`` (default) exempts the globally first occurrence
+    The globally first occurrence
     (smallest ``(id, pos)``) of each duplicated shingle, so exactly
     one copy of repeated content survives the pass — the same
     keep-first rule as CCNet line dedup.  The exemption is
     shingle-level: a protected first occurrence can still lose tokens
     to an overlapping span of OTHER duplicated shingles (interval
     semantics, the approximation the k-gram relaxation makes).
-    ``keep_first=False`` excises every occurrence (the decontamination
-    stance: no copy is trustworthy).
 
     ``clean_text`` is the kept tokens rejoined with single spaces —
     tokens are the operator's unit, as in the chunking family;
@@ -189,19 +163,8 @@ def remove_dup_spans(
     and a per-row indexed ``filter`` lambda — no extra shuffle beyond
     the span pipeline itself.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if min_count < 2:
-        raise ValueError(
-            f"min_count must be >= 2 (1 would flag every position), "
-            f"got {min_count}"
-        )
-    sid = F.col(id_col)
-    spans = _merge_islands(
-        _flagged_positions(df, id_col, text_col, k, min_count, keep_first),
-        id_col,
-        k,
-    )
+    sid = F.col("doc_id")
+    spans = _merge_islands(_flagged_positions(df, keep_first=True))
     per_doc = spans.groupBy(sid).agg(
         F.collect_list(
             F.struct(
@@ -211,9 +174,9 @@ def remove_dup_spans(
         F.count(F.lit(1)).alias("__n_spans"),
     )
     docs = df.where(sid.isNotNull()).select(
-        sid, F.col(text_col).alias("__text"), tokens(text_col).alias("__tk")
+        sid, F.col("text").alias("__text"), tokens("text").alias("__tk")
     )
-    joined = docs.join(per_doc, on=id_col, how="left")
+    joined = docs.join(per_doc, on="doc_id", how="left")
     kept = F.expr(
         "filter(__tk, (t, i) -> __spans IS NULL OR "
         "NOT exists(__spans, sp -> i >= sp.s AND i < sp.e))"
@@ -234,10 +197,10 @@ def remove_dup_spans(
         .otherwise(F.lit(0))
         .alias("n_tokens_removed"),
         F.coalesce(F.col("__n_spans"), F.lit(0)).alias("n_spans_removed"),
-    ).orderBy(id_col)
+    ).orderBy("doc_id")
 
 
-def dup_spans_sql(k: int = 5) -> str:
+def dup_spans_sql() -> str:
     """DuckDB twin of :func:`dup_spans` — same md5 shingle hashes,
     same occurrence threshold, same gaps-and-islands merge.  Shares
     the ngram family's documented quadratic-shingle twin ceiling
@@ -248,7 +211,7 @@ WITH tk AS (
   SELECT doc_id, {_TOK_SQL} AS tk FROM documents
   WHERE doc_id IS NOT NULL
 ), sh AS (
-  SELECT doc_id, {_shingle_sql(k)} AS sh FROM tk
+  SELECT doc_id, {_shingle_sql(SPAN_K)} AS sh FROM tk
 ), pos AS (
   SELECT doc_id, unnest(range(len(sh))) AS p, unnest(sh) AS s
   FROM sh
@@ -261,7 +224,7 @@ WITH tk AS (
 ), isl AS (
   SELECT doc_id, p,
          CASE WHEN lag(p) OVER w IS NULL
-                OR p - lag(p) OVER w > {k} THEN 1 ELSE 0 END AS brk
+                OR p - lag(p) OVER w > {SPAN_K} THEN 1 ELSE 0 END AS brk
   FROM flagged
   WINDOW w AS (PARTITION BY doc_id ORDER BY p)
 ), run AS (
@@ -271,15 +234,15 @@ WITH tk AS (
 )
 SELECT doc_id,
        CAST(min(p) AS INT) AS span_start,
-       CAST(max(p) + {k} AS INT) AS span_end,
-       CAST(max(p) + {k} - min(p) AS INT) AS span_tokens,
+       CAST(max(p) + {SPAN_K} AS INT) AS span_end,
+       CAST(max(p) + {SPAN_K} - min(p) AS INT) AS span_tokens,
        count(*) AS n_dup_shingles
 FROM run GROUP BY doc_id, island
 ORDER BY doc_id, span_start
 """
 
 
-def remove_dup_spans_sql(k: int = 5) -> str:
+def remove_dup_spans_sql() -> str:
     """DuckDB twin of :func:`remove_dup_spans` — same flagged set
     (keep-first by ``row_number`` over ``(id, pos)``, the window form
     of Spark's ``min(struct)``), same islands merge, same indexed
@@ -290,7 +253,7 @@ WITH tk AS (
   SELECT doc_id, text, {_TOK_SQL} AS tk FROM documents
   WHERE doc_id IS NOT NULL
 ), sh AS (
-  SELECT doc_id, {_shingle_sql(k)} AS sh FROM tk
+  SELECT doc_id, {_shingle_sql(SPAN_K)} AS sh FROM tk
 ), pos AS (
   SELECT doc_id, unnest(range(len(sh))) AS p, unnest(sh) AS s
   FROM sh
@@ -304,7 +267,7 @@ WITH tk AS (
 ), isl AS (
   SELECT doc_id, p,
          CASE WHEN lag(p) OVER w IS NULL
-                OR p - lag(p) OVER w > {k} THEN 1 ELSE 0 END AS brk
+                OR p - lag(p) OVER w > {SPAN_K} THEN 1 ELSE 0 END AS brk
   FROM flagged
   WINDOW w AS (PARTITION BY doc_id ORDER BY p)
 ), run AS (
@@ -312,7 +275,7 @@ WITH tk AS (
          sum(brk) OVER (PARTITION BY doc_id ORDER BY p) AS island
   FROM isl
 ), spans AS (
-  SELECT doc_id, min(p) AS s, max(p) + {k} AS e
+  SELECT doc_id, min(p) AS s, max(p) + {SPAN_K} AS e
   FROM run GROUP BY doc_id, island
 ), per_doc AS (
   SELECT doc_id, list(struct_pack(s := s, e := e)) AS spans,

@@ -41,9 +41,26 @@ _TOK_SQL = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
 BM25_K1 = 1.2
 BM25_B = 0.75
 
+#: Terms kept per document by :func:`tf_idf_top_terms` and its twin.
+TOP_TERMS = 3
 
-def tf_idf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document: ``(doc_id, term, tf,
+#: Sparse TF-IDF cosine pairs (:func:`tfidf_cosine_pairs` and its
+#: twin): terms in more documents than ``TFIDF_MAX_DF`` are dropped,
+#: and pairs are kept at rounded cosine >= ``TFIDF_MIN_SIM``.
+TFIDF_MAX_DF = 64
+TFIDF_MIN_SIM = 0.25
+
+#: Token window width and stride of :func:`token_chunks` and its twin
+#: (stride <= width, so every token lands in a chunk).
+CHUNK = 64
+STRIDE = 48
+
+#: Vocabulary entries :func:`vocab_coverage` (and its twin) reports.
+VOCAB_TOP = 50
+
+
+def tf_idf_top_terms(docs: DataFrame) -> DataFrame:
+    """Top-``TOP_TERMS`` TF-IDF terms per document: ``(doc_id, term, tf,
     score, rk)`` with ``score = tf * ln(n_docs / df)`` rounded to 6
     places and ties broken by term text."""
     toks = docs.select("doc_id", F.explode(ltx.tokens("text")).alias("term"))
@@ -65,19 +82,13 @@ def tf_idf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
     )
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TOP_TERMS)
         .select("doc_id", "term", "tf", "score", "rk")
     )
 
 
-def tfidf_cosine_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_sim: float = 0.25,
-    max_df: int = 64,
-) -> DataFrame:
-    """Sparse TF-IDF cosine similarity pairs →
+def tfidf_cosine_pairs(docs: DataFrame) -> DataFrame:
+    """Sparse TF-IDF cosine similarity pairs of ``(doc_id, text)`` →
     ``(id_a, id_b, n_shared_terms, sim)``: the lexical near-dup /
     related-document signal that complements dense-embedding cosine
     (vectors.py) and set-overlap Jaccard (dedup.py) — weighted by
@@ -86,7 +97,7 @@ def tfidf_cosine_pairs(
     Same conventions as :func:`tf_idf_top_terms` (whitespace terms,
     ``idf = ln(N/df)`` with N = corpus row count), plus:
 
-    * **df-cap**: terms in more than ``max_df`` documents are dropped
+    * **df-cap**: terms in more than ``TFIDF_MAX_DF`` documents are dropped
       BEFORE weighting — the ngram-family defense (a stopword's
       posting list would otherwise quadratically dominate the
       self-join), and standard IR practice since common terms carry
@@ -97,14 +108,14 @@ def tfidf_cosine_pairs(
 
     Plan shape: explode → two hash aggregates (term-keyed df,
     doc-keyed norm) → posting-list self-join keyed on ``term``
-    (per-term fan-out bounded by ``max_df``) → pair aggregate.
+    (per-term fan-out bounded by ``TFIDF_MAX_DF``) → pair aggregate.
     Every shuffle is keyed and bounded; no all-pairs stage.  ``sim``
-    is rounded to 6 dp and thresholded on the ROUNDED value so both
-    engines classify boundary pairs identically.
+    is rounded to 6 dp and thresholded (``TFIDF_MIN_SIM``) on the
+    ROUNDED value so both engines classify boundary pairs identically.
     """
-    sid = F.col(id_col)
+    sid = F.col("doc_id")
     toks = docs.where(sid.isNotNull()).select(
-        sid, F.explode(ltx.tokens(text_col)).alias("term")
+        sid, F.explode(ltx.tokens("text")).alias("term")
     )
     # stage(): tf feeds the df cut AND the weighting; wn (below)
     # feeds both self-join sides — without the persists the corpus
@@ -112,12 +123,12 @@ def tfidf_cosine_pairs(
     # winnow_pairs lesson; at warehouse scale these are staging
     # tables, not implicit caches)
     tf = stage(
-        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+        toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     dfr = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= max_df)
+        .where(F.col("df") <= TFIDF_MAX_DF)
     )
     total = docs.agg(F.count(F.lit(1)).alias("__n"))
     wt = (
@@ -130,12 +141,12 @@ def tfidf_cosine_pairs(
         )
     )
     norm = (
-        wt.groupBy(id_col)
+        wt.groupBy("doc_id")
         .agg(F.sqrt(F.sum(F.col("__w") * F.col("__w"))).alias("__nrm"))
         .where(F.col("__nrm") > 0)
     )
     wn = stage(
-        wt.join(norm, on=id_col).select(
+        wt.join(norm, on="doc_id").select(
             sid, F.col("term"), (F.col("__w") / F.col("__nrm")).alias("__wn")
         )
     )
@@ -144,11 +155,11 @@ def tfidf_cosine_pairs(
         a.join(
             b,
             (F.col("a.term") == F.col("b.term"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
         )
         .agg(
             F.count(F.lit(1)).alias("n_shared_terms"),
@@ -156,7 +167,7 @@ def tfidf_cosine_pairs(
                 "sim"
             ),
         )
-        .where(F.col("sim") >= min_sim)
+        .where(F.col("sim") >= TFIDF_MIN_SIM)
         .orderBy("id_a", "id_b")
     )
 
@@ -173,7 +184,7 @@ WITH toks AS (
   SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY doc_id, term
 ), dfr AS (
   SELECT term, count(*) AS df FROM tf GROUP BY term
-  HAVING count(*) <= 64
+  HAVING count(*) <= {TFIDF_MAX_DF}
 ), total AS (
   SELECT count(*) AS n FROM documents
 ), wt AS (
@@ -191,7 +202,7 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(count(*) AS BIGINT) AS n_shared_terms,
        round(sum(a.wn * b.wn), 6) AS sim
 FROM wn a JOIN wn b ON a.term = b.term AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING round(sum(a.wn * b.wn), 6) >= 0.25
+GROUP BY 1, 2 HAVING round(sum(a.wn * b.wn), 6) >= {TFIDF_MIN_SIM}
 ORDER BY id_a, id_b
 """
 
@@ -218,19 +229,15 @@ FROM (
   SELECT *, row_number() OVER (
     PARTITION BY doc_id ORDER BY score DESC, term ASC
   ) AS rk FROM scored
-) WHERE rk <= 3
+) WHERE rk <= {TOP_TERMS}
 """
 
 
-def bigram_lm_nll(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    reference: DataFrame | None = None,
-) -> DataFrame:
-    """CCNet-style statistical quality score: each document's average
-    negative log-likelihood under an add-one-smoothed BIGRAM language
-    model trained on ``reference`` (default: the corpus itself).
+def bigram_lm_nll(docs: DataFrame) -> DataFrame:
+    """CCNet-style statistical quality score: each ``(doc_id, text)``
+    document's average negative log-likelihood under an
+    add-one-smoothed BIGRAM language model trained on the corpus
+    itself.
     Boilerplate and fluent text score LOW (predictable n-grams),
     lorem-gibberish and mojibake score HIGH — the filter signal the
     CCNet pipeline thresholds on (public reference: Wenzek et al.,
@@ -255,46 +262,29 @@ def bigram_lm_nll(
     vocabularies: observed bigrams ≪ corpus size) Spark broadcasts it
     and the skew question disappears entirely, which is what the
     local plan does.  V rides in as a broadcast one-row aggregate,
-    never a driver-side collect.  Training on a separate
-    ``reference`` corpus (the usual deployment: score a crawl against
-    a trusted corpus's model) changes none of the shapes.
+    never a collect.
 
     One-tokenize discipline: the tokenized relation is STAGED
     (``llm/staging.stage`` — callers release after materializing,
     same lifecycle as the LSH staging) because several consumers
-    branch from it; in the self-trained default the bigram model is
-    derived FROM the document bigram stream rather than re-tokenizing
-    the corpus a second time."""
+    branch from it; the bigram model is derived FROM the document
+    bigram stream rather than re-tokenizing the corpus a second
+    time."""
     bigrams = F.explode(
         F.expr(
             "transform(slice(tk, 1, size(tk) - 1), "
             "(w, i) -> struct(w AS w1, tk[i + 1] AS w2))"
         )
     )
-    doc_tk = docs.select(F.col(id_col), ltx.tokens(text_col).alias("tk"))
-    if reference is None:
-        # self-trained: the tokenized relation feeds uni AND the
-        # bigram stream, and the bigram stream feeds the model AND
-        # scoring — stage both (reference mode has single consumers,
-        # so staging there would be pure persist overhead)
-        doc_tk = stage(doc_tk)
-    doc_bi = doc_tk.select(id_col, bigrams.alias("b")).select(
-        id_col, "b.w1", "b.w2"
+    # the tokenized relation feeds uni AND the bigram stream, and the
+    # bigram stream feeds the model AND scoring — stage both
+    doc_tk = stage(docs.select("doc_id", ltx.tokens("text").alias("tk")))
+    doc_bi = stage(
+        doc_tk.select("doc_id", bigrams.alias("b")).select("doc_id", "b.w1", "b.w2")
     )
-    if reference is None:
-        src_tk = doc_tk
-        doc_bi = stage(doc_bi)
-        big = doc_bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    else:
-        src_tk = stage(reference.select(ltx.tokens(text_col).alias("tk")))
-        big = (
-            src_tk.select(bigrams.alias("b"))
-            .select("b.w1", "b.w2")
-            .groupBy("w1", "w2")
-            .agg(F.count(F.lit(1)).alias("c12"))
-        )
+    big = doc_bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     uni = (
-        src_tk.select(F.explode("tk").alias("w"))
+        doc_tk.select(F.explode("tk").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
     )
@@ -310,17 +300,17 @@ def bigram_lm_nll(
                 / (F.coalesce(F.col("c1"), F.lit(0)) + F.col("__v"))
             ),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.round(F.avg("nll"), 6).alias("avg_nll"),
         )
     )
     return (
-        docs.select(id_col)
-        .join(scored, on=id_col, how="left")
+        docs.select("doc_id")
+        .join(scored, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
             "avg_nll",
         )
@@ -328,7 +318,7 @@ def bigram_lm_nll(
 
 
 def bigram_lm_nll_sql() -> str:
-    """DuckDB twin of :func:`bigram_lm_nll` (self-trained form) —
+    """DuckDB twin of :func:`bigram_lm_nll` —
     same tokenizer class, same add-one smoothing, same rounding."""
     return f"""
 WITH tk AS (
@@ -359,19 +349,13 @@ FROM documents t LEFT JOIN agg ON t.doc_id = agg.doc_id
 """
 
 
-def token_chunks(docs: DataFrame, chunk: int = 64, stride: int = 48) -> DataFrame:
+def token_chunks(docs: DataFrame) -> DataFrame:
     """Fixed-stride token windows per document: one output row per
     chunk with ``(doc_id, chunk_idx, n_chunk_tokens, chunk_hash)``.
-    Chunk ``i`` covers tokens ``[i*stride, i*stride + chunk)``; the
+    Chunk ``i`` covers tokens ``[i*STRIDE, i*STRIDE + CHUNK)``; the
     final chunk may be short; every token lands in ≥1 chunk.  The
     hash is ``md5`` of the space-joined window — a portable content
     key for chunk-level dedup downstream."""
-    if not 0 < stride <= chunk:
-        raise ValueError(
-            f"stride must satisfy 0 < stride <= chunk, got stride={stride} "
-            f"chunk={chunk} (stride > chunk would silently leave tokens "
-            "covered by NO chunk, breaking the total-coverage contract)"
-        )
     # NULL text → no chunks: without the filter Spark emits one row
     # per NULL doc hashing the EMPTY string (concat_ws over a null
     # array) while the SQL twin emits NULL hashes — and neither is a
@@ -380,38 +364,33 @@ def token_chunks(docs: DataFrame, chunk: int = 64, stride: int = 48) -> DataFram
         "doc_id", ltx.tokens("text").alias("__tk")
     )
     starts = F.sequence(
-        F.lit(0), F.greatest(F.size("__tk") - 1, F.lit(0)), F.lit(stride)
+        F.lit(0), F.greatest(F.size("__tk") - 1, F.lit(0)), F.lit(STRIDE)
     )
     exploded = staged.select(
         "doc_id", "__tk", F.explode(starts).alias("__start")
     )
-    win = F.slice(F.col("__tk"), F.col("__start") + 1, chunk)
+    win = F.slice(F.col("__tk"), F.col("__start") + 1, CHUNK)
     return exploded.select(
         "doc_id",
-        (F.col("__start") / stride).cast("int").alias("chunk_idx"),
+        (F.col("__start") / STRIDE).cast("int").alias("chunk_idx"),
         F.size(win).alias("n_chunk_tokens"),
         F.md5(F.concat_ws(" ", win)).alias("chunk_hash"),
     )
 
 
-def token_chunks_sql(chunk: int = 64, stride: int = 48) -> str:
+def token_chunks_sql() -> str:
     """DuckDB twin of :func:`token_chunks` (list slices are 1-based
-    and inclusive-end: ``tk[s+1 : s+chunk]`` == Spark
-    ``slice(tk, s+1, chunk)``); same stride contract."""
-    if not 0 < stride <= chunk:
-        raise ValueError(
-            f"stride must satisfy 0 < stride <= chunk, got stride={stride} "
-            f"chunk={chunk}"
-        )
+    and inclusive-end: ``tk[s+1 : s+CHUNK]`` == Spark
+    ``slice(tk, s+1, CHUNK)``)."""
     return f"""
 WITH t AS (
   SELECT doc_id, {_TOK_SQL} AS tk FROM documents WHERE text IS NOT NULL
 )
 SELECT doc_id,
-       CAST(start // {stride} AS INTEGER) AS chunk_idx,
-       CAST(len(tk[start+1 : start+{chunk}]) AS INTEGER) AS n_chunk_tokens,
-       md5(array_to_string(tk[start+1 : start+{chunk}], ' ')) AS chunk_hash
-FROM t, unnest(range(0, greatest(len(tk), 1), {stride})) AS u(start)
+       CAST(start // {STRIDE} AS INTEGER) AS chunk_idx,
+       CAST(len(tk[start+1 : start+{CHUNK}]) AS INTEGER) AS n_chunk_tokens,
+       md5(array_to_string(tk[start+1 : start+{CHUNK}], ' ')) AS chunk_hash
+FROM t, unnest(range(0, greatest(len(tk), 1), {STRIDE})) AS u(start)
 """
 
 
@@ -956,8 +935,8 @@ def bm25_prf_topk_sql(
     )
 
 
-def vocab_coverage(docs: DataFrame, v: int = 50) -> DataFrame:
-    """Vocabulary-construction audit → the top-``v`` corpus tokens
+def vocab_coverage(docs: DataFrame) -> DataFrame:
+    """Vocabulary-construction audit → the top-``VOCAB_TOP`` (v) corpus tokens
     with ``(token, n, rk, share, cum_cov)`` ordered by rank — the
     BPE-prep question "how large must the vocabulary be to cover X%
     of the token stream" (1 − cum_cov at rank v is the OOV rate a
@@ -970,8 +949,6 @@ def vocab_coverage(docs: DataFrame, v: int = 50) -> DataFrame:
     per-partition heaps, NO shuffle of the vocab relation — so the
     rank/cumulative windows run over ≤ v rows.  Ties rank (count
     DESC, token ASC), both binary collation."""
-    if v < 1:
-        raise ValueError(f"v must be >= 1, got {v}")
     sid = F.col("doc_id")
     counts = (
         docs.where(sid.isNotNull() & F.col("text").isNotNull())
@@ -980,7 +957,7 @@ def vocab_coverage(docs: DataFrame, v: int = 50) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     total = counts.agg(F.sum("n").alias("__tot"))
-    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(v)
+    top = counts.orderBy(F.desc("n"), F.asc("token")).limit(VOCAB_TOP)
     w = Window.orderBy(F.desc("n"), F.asc("token"))
     return (
         top.crossJoin(F.broadcast(total))  # 1-row corpus-total relation
@@ -1017,7 +994,7 @@ WITH tok AS (
   SELECT token, n,
          CAST(row_number() OVER (ORDER BY n DESC, token) AS INT) AS rk
   FROM c
-  QUALIFY rk <= 50
+  QUALIFY rk <= {VOCAB_TOP}
 )
 SELECT token, n, rk,
        round(n / CAST(__tot AS DOUBLE), 6) AS share,

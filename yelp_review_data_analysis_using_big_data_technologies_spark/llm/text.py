@@ -173,12 +173,11 @@ def shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
 def shingled(
     df,
     keep_cols: list[str],
-    text_col: str = "text",
     n: int = 3,
     out: str = "__sh",
 ):
     """Corpus-scale shingle builder: project down to ``keep_cols`` +
-    the token array in one projection, derive shingles from the bound
+    the token array of ``text`` in one projection, derive shingles from the bound
     column in a second.  With this minimal shape Catalyst leaves the
     two projections uncollapsed (the token array is referenced
     multiple times), so the tokenizer runs once per ROW — inlining it
@@ -189,7 +188,7 @@ def shingled(
     defeats the non-collapse shape, so project first, join back later
     if you need more columns."""
     tok = f"__toks_{out}"
-    staged = df.select(*keep_cols, tokens(text_col).alias(tok))
+    staged = df.select(*keep_cols, tokens("text").alias(tok))
     return staged.select(
         *keep_cols, shingles_from_tokens(tok, n).alias(out)
     )

@@ -43,7 +43,6 @@ from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources import writers
@@ -63,6 +62,10 @@ POOL_PLANES = 72
 #: bucket key over ``n_planes`` planes of the pool), shared by the
 #: Spark operators and their DuckDB twin.
 N_BANDS = 3
+
+#: Cosine at or above which two embeddings are near-duplicates (the
+#: banded sign-LSH pair join, its delta admission and the twin).
+COS_THRESHOLD = 0.4
 
 
 def _frozen_planes(n_planes: int = N_PLANES) -> list[list[float]]:
@@ -234,13 +237,13 @@ def _seed_centroid_rows(
 
 
 def _coarse_rows(
-    corpus: DataFrame, id_col: str, n_cells: int, centroids: DataFrame | None
+    corpus: DataFrame, n_cells: int, centroids: DataFrame | None
 ) -> list[tuple[int, list[float]]]:
     """The coarse quantizer's rows: the given ``centroids`` frame if
     any, else the seed quantizer over ``corpus``."""
     if centroids is not None:
         return _collect_centroids(centroids)
-    return _seed_centroid_rows(corpus, id_col, n_cells)
+    return _seed_centroid_rows(corpus, "vec_id", n_cells)
 
 
 def _vector_corpus(
@@ -772,14 +775,13 @@ def _band_verified(
 
 def cosine_near_dup_pairs(
     embeddings: DataFrame,
-    threshold: float = 0.4,
     n_planes: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via BANDED sign-LSH:
     ``N_BANDS`` independent bucket keys (band b = ``n_planes`` planes
     from the frozen pool), candidates = pairs sharing ≥1 band bucket
     (the MinHash S-curve applied to hyperplane LSH), verified with
-    exact cosine.  Returns ``(id_a, id_b, cos_sim)`` with
+    exact cosine ≥ ``COS_THRESHOLD``.  Returns ``(id_a, id_b, cos_sim)`` with
     ``id_a < id_b``.
 
     Scale shape: when ``n_planes`` is None it is derived from the
@@ -811,7 +813,7 @@ def cosine_near_dup_pairs(
     )
     return (
         _band_verified(cands, base, base, "id_a", "id_b", "cos_sim")
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= COS_THRESHOLD)
         .dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", "cos_sim")
     )
@@ -820,12 +822,11 @@ def cosine_near_dup_pairs(
 def cosine_dedup_delta(
     corpus: DataFrame,
     delta: DataFrame,
-    threshold: float = 0.4,
     n_planes: int | None = None,
 ) -> DataFrame:
     """Incremental SEMANTIC dedup at the embedding level (r12 — the
     vector analogue of ``llm.dedup.dedup_against_corpus``): keep only
-    the ``delta`` rows with NO cosine near-duplicate (≥ ``threshold``)
+    the ``delta`` rows with NO cosine near-duplicate (≥ ``COS_THRESHOLD``)
     in the accumulated ``corpus``.  The N+δ ingestion shape: band
     keys are computed for BOTH sides from the same frozen plane pool,
     candidates are the R-S pairs sharing ≥1 band bucket (delta keys
@@ -862,7 +863,7 @@ def cosine_dedup_delta(
     )
     matched = (
         _band_verified(cands, base_d, base_c, "__id_d", "__id_c", "__cos")
-        .filter(F.col("__cos") >= threshold)
+        .filter(F.col("__cos") >= COS_THRESHOLD)
         .select(F.col("__id_d").alias("vec_id"))
         .distinct()
     )
@@ -893,7 +894,7 @@ SELECT id_a, id_b, round(list_cosine_similarity(ea.v, eb.v), 6) AS cos_sim
 FROM cands
 JOIN e ea ON ea.vec_id = cands.id_a
 JOIN e eb ON eb.vec_id = cands.id_b
-WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= 0.4
+WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= {COS_THRESHOLD}
 """
 
 
@@ -979,9 +980,7 @@ def _cell_scores(
 
 
 def _assign_cells_literal(
-    corpus: DataFrame,
-    cent_rows: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
+    corpus: DataFrame, cent_rows: list[tuple[int, list[float]]]
 ) -> DataFrame:
     """Map-side nearest-cell (max cosine, ties → smallest ``cell_id``)
     over a pre-projected ``(id, …, __v, __n)`` corpus (``__n`` =
@@ -1029,8 +1028,8 @@ def top_k_ann_ivf(
     # Deterministic seed quantizer unless centroids are given: the
     # n_cells smallest-id vectors (bounded TakeOrdered collect,
     # materializes the staged corpus).
-    cent_rows = _coarse_rows(corpus, "vec_id", n_cells, centroids)
-    assigned = _assign_cells_literal(corpus, cent_rows, "vec_id")
+    cent_rows = _coarse_rows(corpus, n_cells, centroids)
+    assigned = _assign_cells_literal(corpus, cent_rows)
     probes = _probe_frame(
         queries, cent_rows, n_probe, "query_id", "query_vec"
     )
@@ -1064,7 +1063,7 @@ def top_k_ann_ivf_multidial(
     Returns ``[(p, top_k_frame), ...]`` in the given dial order."""
     corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
     cent_rows = _seed_centroid_rows(corpus, "vec_id", n_cells)
-    assigned = _assign_cells_literal(corpus, cent_rows, "vec_id")
+    assigned = _assign_cells_literal(corpus, cent_rows)
     probes_ranked = _probe_frame(
         queries, cent_rows, max(probes), "query_id", "query_vec",
         rank_col="__pr",
@@ -1261,14 +1260,15 @@ FROM coded
 """
 
 
-def train_pq_codebooks(
-    embeddings: DataFrame,
-    m: int = 4,
-    k: int = 16,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization codebooks: split each vector into ``m``
-    contiguous sub-vectors and fit an independent ``k``-centroid
+#: Product-quantization shape: ``PQ_M`` subspaces of ``PQ_K`` codes
+#: each (4 bits per subspace, 16 bits per vector).
+PQ_M = 4
+PQ_K = 16
+
+
+def train_pq_codebooks(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """Product-quantization codebooks: split each vector into ``PQ_M``
+    contiguous sub-vectors and fit an independent ``PQ_K``-centroid
     KMeans per subspace on a deterministically-capped training sample
     (driver-side vectorized Lloyd — see the inline rationale).
     Returns ``(subspace, code, __c)`` with ``m × k`` rows — codebook
@@ -1278,7 +1278,7 @@ def train_pq_codebooks(
 
     PQ beats scalar int8 at equal-or-smaller code size because codes
     index LEARNED per-subspace centroids (k=16 → 4 bits per subspace,
-    m=4 → 16 bits/vector here vs 8 bits/DIM for int8), the standard
+    m=4 → 16 bits/vector vs 8 bits/DIM for int8), the standard
     ANN compression (Jégou et al., "Product Quantization for Nearest
     Neighbor Search", TPAMI'11).
     """
@@ -1286,9 +1286,9 @@ def train_pq_codebooks(
 
     spark = embeddings.sparkSession
     dim = embeddings.select(F.size(F.col(vec_col)).alias("d")).first().d
-    if dim % m != 0:
-        raise ValueError(f"vector dim {dim} not divisible into {m} subspaces")
-    sub = dim // m
+    if dim % PQ_M != 0:
+        raise ValueError(f"vector dim {dim} not divisible into {PQ_M} subspaces")
+    sub = dim // PQ_M
     # Codebook training does NOT need the full corpus — the standard
     # PQ recipe fits on a bounded sample and encodes everything — and
     # running Lloyd as m distributed pyspark.ml fits pays
@@ -1315,17 +1315,18 @@ def train_pq_codebooks(
         raise ValueError("empty training set for PQ codebooks")
 
     rows = []
-    for j in range(m):
+    for j in range(PQ_M):
         X = np.ascontiguousarray(X_full[:, j * sub : (j + 1) * sub])
-        C = _lloyd(X, k, seed=42 + j)
+        C = _lloyd(X, seed=42 + j)
         rows += [
             (j, c, [float(x) for x in cent]) for c, cent in enumerate(C)
         ]
     return spark.createDataFrame(rows, "subspace int, code int, __c array<double>")
 
 
-def _lloyd(X, k: int, seed: int):
-    """Vectorized driver-side Lloyd iterations on a bounded sample.
+def _lloyd(X, seed: int):
+    """Vectorized numpy Lloyd iterations (k = ``PQ_K`` centroids)
+    on a bounded sample.
 
     Init is UNIQUE-FIRST and deterministic: distinct points seed the
     centroids before any repeats, so a corpus with ≤ k distinct
@@ -1335,6 +1336,7 @@ def _lloyd(X, k: int, seed: int):
     empty clusters keep their previous centroid."""
     import numpy as np
 
+    k = PQ_K
     uniq = np.unique(X, axis=0)
     rng = np.random.default_rng(seed)
     if len(uniq) >= k:
@@ -1404,13 +1406,13 @@ def pq_encode_mse(embeddings: DataFrame, codebooks: DataFrame) -> DataFrame:
     return coded.select("vec_id", "pq_codes", mse.alias("mse"))
 
 
-def quantize_pq(embeddings: DataFrame, m: int = 4, k: int = 16) -> DataFrame:
+def quantize_pq(embeddings: DataFrame) -> DataFrame:
     """Train-and-encode composition: per-subspace KMeans codebooks →
     literal-inlined encode + reconstruction MSE.  Rows-only for the
     driver (KMeans cell boundaries are engine-specific); quality is
     pinned by unit tests (exact reconstruction on a ≤k-distinct
     corpus, MSE ≪ per-dim variance on the synthetic embeddings)."""
-    cb = train_pq_codebooks(embeddings, m=m, k=k)
+    cb = train_pq_codebooks(embeddings)
     return pq_encode_mse(embeddings, cb)
 
 
@@ -1457,8 +1459,6 @@ def top_k_ann_ivfpq(
     k: int = 5,
     n_cells: int = 8,
     n_probe: int = 2,
-    m: int = 4,
-    k_codes: int = 16,
     rerank: int = 4,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
@@ -1472,8 +1472,8 @@ def top_k_ann_ivfpq(
 
     - coarse quantizer: ``n_cells`` centroids; every corpus vector
       stores its ``cell_id`` (:func:`_assign_cells_literal`),
-    - PQ codes of the RESIDUAL ``v − centroid(cell)`` — ``m`` codes of
-      ``log2(k_codes)`` bits each (here 4×4 = 16 bits/vector vs
+    - PQ codes of the RESIDUAL ``v − centroid(cell)`` — 4 codes of
+      ``log2(16)`` bits each (4×4 = 16 bits/vector vs
       64×4 B raw) from per-subspace KMeans codebooks
       (:func:`train_pq_codebooks` on the residual frame),
     - the exact row norm (one double; at scale you'd quantize it too).
@@ -1481,7 +1481,7 @@ def top_k_ann_ivfpq(
     Search side: each query picks its ``n_probe`` nearest cells
     map-side (literal centroids, :func:`_cell_scores`), then builds an
     ADC lookup table — ``dot(q_slice_j, codebook[j][c])`` for all
-    ``m × k_codes`` entries, a pure projection on the tiny query frame.
+    4 × 16 entries, a pure projection on the tiny query frame.
     The probe broadcast joins the encoded corpus on ``cell_id`` and the
     approximate score is ONE table lookup per subspace::
 
@@ -1499,7 +1499,7 @@ def top_k_ann_ivfpq(
     recall@k vs :func:`top_k_bruteforce` is pinned by unit tests.
     """
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, m, k_codes, centroids, codebooks
+        embeddings, queries, n_cells, n_probe, centroids, codebooks
     )
     return _adc_rank_joined(cand, corpus, k, rerank, "vec_id", "query_id")
 
@@ -1509,8 +1509,6 @@ def _ivfpq_in_memory(
     queries: DataFrame,
     n_cells: int,
     n_probe: int,
-    m: int,
-    k_codes: int,
     centroids: DataFrame | None,
     codebooks: DataFrame | None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -1521,8 +1519,8 @@ def _ivfpq_in_memory(
     # Staged: the corpus projection has two consumers (PQ encode, exact
     # re-rank by id); the registry releases it after materialization.
     corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
-    cent_rows = _coarse_rows(corpus, "vec_id", n_cells, centroids)
-    assigned = _assign_cells_literal(corpus, cent_rows, "vec_id")
+    cent_rows = _coarse_rows(corpus, n_cells, centroids)
+    assigned = _assign_cells_literal(corpus, cent_rows)
     # Residual frame: v − centroid(cell) (:func:`_residual_frame` —
     # one literal array-of-arrays lookup, no join).  STAGED: its
     # consumers are the codebook trainer's sample collect plus the
@@ -1533,7 +1531,7 @@ def _ivfpq_in_memory(
     # scale).
     resid = stage(_residual_frame(assigned, cent_rows, "vec_id"))
     if codebooks is None:
-        codebooks = train_pq_codebooks(resid, m=m, k=k_codes, vec_col="__r")
+        codebooks = train_pq_codebooks(resid, vec_col="__r")
     # eager fills (r15 opt): with PRE-TRAINED centroids/codebooks (the
     # recall-profile sweep) no trainer collect runs, so these staged
     # relations would fill lazily inside the final query, whose encode
@@ -1659,7 +1657,6 @@ def top_k_ann_ivfpq_multirerank(
     reranks: Sequence[int],
     n_cells: int = 8,
     n_probe: int = 2,
-    k_codes: int = 16,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
 ) -> list[tuple[int, DataFrame]]:
@@ -1674,7 +1671,7 @@ def top_k_ann_ivfpq_multirerank(
     :func:`top_k_ann_ivfpq` call's (same ADC table, same cosine, same
     final tie-break).  Returns ``[(r, top_k_frame), ...]``."""
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, 4, k_codes, centroids, codebooks
+        embeddings, queries, n_cells, n_probe, centroids, codebooks
     )
     # _adc_rank_joined's epilogue at the widest cut, keeping __crk
     candidates = _adc_candidates(
@@ -1731,7 +1728,7 @@ def train_ivfpq_params(
     corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
     cent_rows = _seed_centroid_rows(corpus, "vec_id", n_cells)
     resid = _residual_frame(
-        _assign_cells_literal(corpus, cent_rows, "vec_id"), cent_rows, "vec_id"
+        _assign_cells_literal(corpus, cent_rows), cent_rows, "vec_id"
     )
     codebooks = train_pq_codebooks(resid, vec_col="__r")
     centroids = spark.createDataFrame(
@@ -1993,7 +1990,6 @@ def build_ivf_index(
     n_cells: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
     meta_cols: Sequence[str] = (),
 ) -> IndexParams:
     """Materialize a PERSISTED IVF index: the corpus assigned to its
@@ -2020,8 +2016,8 @@ def build_ivf_index(
     Returns the :class:`IndexParams` just written.
     """
     corpus = _vector_corpus(embeddings, id_col, vec_col, meta_cols)
-    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
-    assigned = _assign_cells_literal(corpus, cent_rows, id_col)
+    cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
+    assigned = _assign_cells_literal(corpus, cent_rows)
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
         f"{path}/cells"
     )
@@ -2033,11 +2029,8 @@ def build_ivfpq_index(
     embeddings: DataFrame,
     path: str,
     n_cells: int = 8,
-    m: int = 4,
-    k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
     meta_cols: Sequence[str] = (),
 ) -> IndexParams:
@@ -2045,8 +2038,8 @@ def build_ivfpq_index(
     #3): what a 100-TB serving deployment actually stores.  The raw
     :func:`build_ivf_index` keeps full float vectors in every cell —
     at 64 dims that is 512 B/vector scanned per probe; this index
-    stores ``m·log2(k_codes)``-bit PQ codes of the cell residual
-    (16 bits/vector at the defaults) plus the exact norm, so a probe
+    stores 4 × 4-bit PQ codes of the cell residual (16 bits/vector)
+    plus the exact norm, so a probe
     reads ~30× fewer corpus bytes, and keeps the raw vectors in a
     SEPARATE relation fetched BY ID only for the ≤ ``rerank·k``
     exact-re-rank candidates.
@@ -2077,17 +2070,17 @@ def build_ivfpq_index(
     # staged: consumers are the seed collect, the vectors write, and
     # the residual/encode projection
     corpus = stage(_vector_corpus(embeddings, id_col, vec_col, meta_cols))
-    cent_rows = _coarse_rows(corpus, id_col, n_cells, centroids)
+    cent_rows = _seed_centroid_rows(corpus, id_col, n_cells)
     resid = stage(
         _residual_frame(
-            _assign_cells_literal(corpus, cent_rows, id_col),
+            _assign_cells_literal(corpus, cent_rows),
             cent_rows,
             id_col,
             extra_cols=meta_cols,
         )
     )
     if codebooks is None:
-        codebooks = train_pq_codebooks(resid, m=m, k=k_codes, vec_col="__r")
+        codebooks = train_pq_codebooks(resid, vec_col="__r")
     params = IndexParams(cent_rows, _collect_codebooks(codebooks))
     resid.select(
         id_col,
@@ -2141,7 +2134,7 @@ def _merge(
     # cannot be released and would leak a persistent RDD per streaming
     # micro-batch).
     encoded = codec.encode(
-        _assign_cells_literal(corpus, params.cent_rows, id_col), params
+        _assign_cells_literal(corpus, params.cent_rows), params
     ).persist()
     try:
         new_cells = {
@@ -2255,17 +2248,13 @@ def delete_from_ivf_index(delta_ids: DataFrame, path: str) -> None:
     try:
         for codec in (_RAW, _PQ):
             p = f"{path}/{codec.rel}"
-            if not writers.hadoop_path_exists(spark, p):
+            # a missing relation, or a _SUCCESS-only root left by an
+            # interrupted erasure on a pre-tombstone layout, stores
+            # nothing to forget; a stored relation that
+            # cannot be read raises here rather than being skipped
+            if not writers.hadoop_table_exists(spark, p):
                 continue
-            try:
-                stored = spark.read.parquet(p)
-            except AnalysisException:
-                # Schema-less root (e.g. a _SUCCESS-only directory
-                # left by an interrupted erasure on a pre-tombstone
-                # layout): nothing is stored, so there is nothing to
-                # forget — treat as already-empty instead of failing
-                # the re-run (r15 / ADVICE).
-                continue
+            stored = spark.read.parquet(p)
             prior_cells = _cells_holding(stored, ids, "vec_id")
             if not prior_cells:
                 continue
@@ -2499,7 +2488,6 @@ def search_ivf_index_filtered(
     where: str,
     k: int = 5,
     n_probe: int = 2,
-    id_col: str = "vec_id",
     params: IndexParams | None = None,
 ) -> DataFrame:
     """FILTERED top-k over a persisted IVF index — the
@@ -2527,7 +2515,7 @@ def search_ivf_index_filtered(
     widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
     """
     return _search(
-        _RAW, spark, path, queries, params, where, k, n_probe, 0, id_col
+        _RAW, spark, path, queries, params, where, k, n_probe, 0, "vec_id"
     )
 
 
@@ -2537,7 +2525,6 @@ def search_ivfpq_index(
     queries: DataFrame,
     k: int = 5,
     n_probe: int = 2,
-    rerank: int = 4,
     id_col: str = "vec_id",
     params: IndexParams | None = None,
 ) -> DataFrame:
@@ -2547,13 +2534,13 @@ def search_ivfpq_index(
     column (directory pruning — only those cells' CODE files are
     read, and a code file is ~30× narrower than a raw-vector file),
     ADC scoring via the same lookup expressions as the in-memory
-    operator, then exact re-rank of the ≤ ``rerank·k`` survivors by
+    operator, then exact re-rank of the ≤ ``4·k`` survivors by
     id fetch against ``{path}/vectors``.  With the same dials and
     seeds the results are IDENTICAL to :func:`top_k_ann_ivfpq`
     (pinned in tests/test_ivfpq_index.py) — the persistence
     round-trip is lossless."""
     return _search(
-        _PQ, spark, path, queries, params, None, k, n_probe, rerank, id_col
+        _PQ, spark, path, queries, params, None, k, n_probe, 4, id_col
     )
 
 
@@ -2564,8 +2551,6 @@ def search_ivfpq_index_filtered(
     where: str,
     k: int = 5,
     n_probe: int = 2,
-    rerank: int = 4,
-    id_col: str = "vec_id",
     params: IndexParams | None = None,
 ) -> DataFrame:
     """FILTERED top-k over the persisted IVF-PQ index (r14, the
@@ -2582,18 +2567,18 @@ def search_ivfpq_index_filtered(
     ladder is re-derived from the FILTERED cell populations, so a
     selective predicate widens the probe instead of starving the
     result below k.  Within the chosen rung: ADC approximate scoring
-    over the filtered codes, top ``rerank·k`` per query, exact-cosine
+    over the filtered codes, top ``4·k`` per query, exact-cosine
     re-rank via the by-id ``vectors`` fetch.
 
     Scale shape: BOTH predicates reach the CODE scan — ``cell_id
     isin`` as PartitionFilters (directory pruning) and ``where`` as a
     pushed data filter (plan-pinned in tests/test_plans.py) — and the
-    raw-vector relation is touched only by the ≤ ``rerank·k``-per-
+    raw-vector relation is touched only by the ≤ ``4·k``-per-
     query id fetch, AFTER the filter decision; rung t reads
     ``min(2^t·n_probe, n_cells)/n_cells`` of the code bytes for the
     still-starved queries only.  The per-rung candidate count is a
     bounded ≤|Q|-row collect off the staged code×probe join (shared
     with the ranking — the join is staged once per rung)."""
     return _search(
-        _PQ, spark, path, queries, params, where, k, n_probe, rerank, id_col
+        _PQ, spark, path, queries, params, where, k, n_probe, 4, "vec_id"
     )

@@ -32,7 +32,7 @@ there is no skew beyond the corpus's own longest doc.
 ``winnow_pairs`` then turns fingerprints into near-dup candidate
 pairs by an inverted-index self-join on the fingerprint hash — the
 same bucket-join shape as banded MinHash LSH, with the same
-df-cap defense (a fingerprint appearing in more than ``max_df`` docs
+df-cap defense (a fingerprint appearing in more than ``WINNOW_MAX_DF`` docs
 is boilerplate; it is dropped from pairing BEFORE the join so one
 viral snippet cannot quadratically explode a bucket).
 
@@ -55,20 +55,21 @@ from .text import shingled
 #: past any sane row size; the bound is documented, not checked).
 _POS_PAD = 9
 
+#: Winnowing shape shared with the twins: ``WINNOW_K``-token shingles,
+#: ``WINNOW_W``-shingle windows; pairs share >= 2 fingerprints, each in
+#: at most ``WINNOW_MAX_DF`` docs.
+WINNOW_K = 3
+WINNOW_W = 4
+WINNOW_MAX_DF = 64
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    w: int = 4,
-) -> DataFrame:
-    """Per-document winnowing fingerprint set →
-    ``(id_col, fp_pos, fp)`` sorted by (id, position).
 
-    * ``k`` — shingle width in tokens (no fingerprint from a run
-      shorter than this);
-    * ``w`` — window width in shingles (every shared run of
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
+    """Per-document winnowing fingerprint set of ``(doc_id, text)`` →
+    ``(doc_id, fp_pos, fp)`` sorted by (id, position).
+
+    * ``k = WINNOW_K`` — shingle width in tokens (no fingerprint from
+      a run shorter than this);
+    * ``w = WINNOW_W`` — window width in shingles (every shared run of
       ``w + k - 1`` tokens is caught).
 
     Short docs: with ``0 < m < w`` shingles there is one clamped
@@ -78,16 +79,14 @@ def winnow_fingerprints(
     output.  NULL ids are not fingerprintable and are dropped — the
     same contract as pack_bins.
     """
-    if k < 1 or w < 1:
-        raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-    sid = F.col(id_col)
+    sid = F.col("doc_id")
     # shingled() keeps tokenize→shingle as two UNCOLLAPSED projections
     # (inlining the tokenizer into the shingle lambda re-runs it per
     # SHINGLE — the measured 7.5× trap); spread() lifts the CPU-heavy
     # md5/explode stage off a single input split on byte-tiny inputs
     # (no-op when the table already has cluster parallelism).
     sh = spread(
-        shingled(df.where(sid.isNotNull()), [id_col], text_col, n=k)
+        shingled(df.where(sid.isNotNull()), ["doc_id"], n=WINNOW_K)
     )
     staged = sh.select(
         sid,
@@ -100,9 +99,9 @@ def winnow_fingerprints(
         F.lpad(F.col("__p").cast("string"), _POS_PAD, "0"),
     )
     frame = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("__p")
-        .rowsBetween(Window.currentRow, w - 1)
+        .rowsBetween(Window.currentRow, WINNOW_W - 1)
     )
     return (
         staged.select(
@@ -111,7 +110,7 @@ def winnow_fingerprints(
             F.col("__p"),
             F.min(enc).over(frame).alias("__sel"),
         )
-        .where(F.col("__p") <= F.greatest(F.col("__m") - w, F.lit(0)))
+        .where(F.col("__p") <= F.greatest(F.col("__m") - WINNOW_W, F.lit(0)))
         .select(sid, F.col("__sel"))
         .distinct()
         .select(
@@ -119,19 +118,19 @@ def winnow_fingerprints(
             F.substring("__sel", 34, _POS_PAD).cast("int").alias("fp_pos"),
             F.substring("__sel", 1, 32).alias("fp"),
         )
-        .orderBy(id_col, "fp_pos")
+        .orderBy("doc_id", "fp_pos")
     )
 
 
-def winnow_pairs(fps: DataFrame, min_shared: int = 2, max_df: int = 64) -> DataFrame:
+def winnow_pairs(fps: DataFrame) -> DataFrame:
     """Candidate near-dup pairs from a :func:`winnow_fingerprints`
-    output: documents sharing at least ``min_shared`` distinct
-    fingerprint hashes → ``(id_a, id_b, n_shared)``.
+    output: documents sharing at least two distinct fingerprint
+    hashes → ``(id_a, id_b, n_shared)``.
 
     Inverted-index self-join on the hash (shuffle key = fp), with
-    fingerprints present in more than ``max_df`` documents dropped
-    before the join — the LSH ``max_bucket`` / ngram ``max_df``
-    defense against boilerplate buckets going quadratic.
+    fingerprints present in more than ``WINNOW_MAX_DF`` documents
+    dropped before the join — the ngram ``MAX_DF`` defense against
+    boilerplate buckets going quadratic.
     """
     # stage(): the fingerprint pipeline (window + distinct) is
     # referenced THREE times below (both join sides + the df cut) —
@@ -140,7 +139,7 @@ def winnow_pairs(fps: DataFrame, min_shared: int = 2, max_df: int = 64) -> DataF
     rare = (
         by_fp.groupBy("fp")
         .agg(F.count("*").alias("__df"))
-        .where(F.col("__df") <= max_df)
+        .where(F.col("__df") <= WINNOW_MAX_DF)
         .select("fp")
     )
     indexed = by_fp.join(rare, "fp")
@@ -155,7 +154,7 @@ def winnow_pairs(fps: DataFrame, min_shared: int = 2, max_df: int = 64) -> DataF
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
         )
         .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+        .where(F.col("n_shared") >= 2)
         .orderBy("id_a", "id_b")
     )
 
@@ -184,7 +183,7 @@ WITH tk AS (
   SELECT doc_id, {_TOK_SQL} AS tk FROM documents
   WHERE doc_id IS NOT NULL
 ), sh AS (
-  SELECT doc_id, {_shingle_sql(3)} AS sh FROM tk
+  SELECT doc_id, {_shingle_sql(WINNOW_K)} AS sh FROM tk
 ), pos AS (
   SELECT doc_id, len(sh) AS m,
          unnest(range(len(sh))) AS p, unnest(sh) AS s
@@ -193,13 +192,13 @@ WITH tk AS (
   SELECT doc_id, m, p,
          min(md5(s) || ':' || lpad(CAST(p AS VARCHAR), {_POS_PAD}, '0'))
            OVER (PARTITION BY doc_id ORDER BY p
-                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS sel
+                 ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS sel
   FROM pos
 )
 SELECT DISTINCT doc_id,
        CAST(substring(sel, 34, {_POS_PAD}) AS INT) AS fp_pos,
        substring(sel, 1, 32) AS fp
-FROM win WHERE p <= greatest(m - 4, 0)
+FROM win WHERE p <= greatest(m - {WINNOW_W}, 0)
 ORDER BY doc_id, fp_pos
 """
 
@@ -211,7 +210,7 @@ def winnow_pairs_sql() -> str:
 WITH fps AS ({winnow_fingerprints_sql()}),
 by_fp AS (SELECT DISTINCT doc_id AS id, fp FROM fps),
 rare AS (
-  SELECT fp FROM by_fp GROUP BY fp HAVING count(*) <= 64
+  SELECT fp FROM by_fp GROUP BY fp HAVING count(*) <= {WINNOW_MAX_DF}
 ),
 indexed AS (SELECT id, fp FROM by_fp JOIN rare USING (fp))
 SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_shared

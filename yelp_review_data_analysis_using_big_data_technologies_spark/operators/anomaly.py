@@ -2,7 +2,7 @@
 
 The data-quality primitive monitoring pipelines run per metric key:
 where do the bulk quantiles sit, how many points fall outside the
-Tukey fences (q1 − k·IQR, q3 + k·IQR), and how many are >3 classic
+Tukey fences (q1 − 1.5·IQR, q3 + 1.5·IQR), and how many are >3 classic
 standard deviations out.  Complements the MAD UDAF
 (functions/udafs.py) — IQR fences are the textbook robust rule, MAD
 the robust dispersion estimate.
@@ -23,43 +23,41 @@ swap in percentile_approx at production scale when ±ε is acceptable.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Buckets of :func:`equidepth_histogram` and its twin (edges at the
+#: quartiles).
+HIST_BUCKETS = 4
 
-def iqr_outlier_profile(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_type",),
-    value_col: str = "value",
-    k: float = 1.5,
-) -> DataFrame:
-    """Per-key robust outlier panel → ``(keys…, n, q1, q3, iqr,
-    lo_fence, hi_fence, n_outliers, outlier_frac, n_z3)``.
 
-    Rows with NULL or non-finite ``value_col`` are dropped up front
+def iqr_outlier_profile(events: DataFrame) -> DataFrame:
+    """Per-``event_type`` robust outlier panel of ``value`` →
+    ``(event_type, n, q1, q3, iqr, lo_fence, hi_fence, n_outliers,
+    outlier_frac, n_z3)``.
+
+    Rows with NULL or non-finite ``value`` are dropped up front
     (every output column covers the same row set).  ``n_z3`` counts
     |value − mean| > 3·stddev_samp; single-row keys have NULL stddev
     and therefore 0 such outliers — same on both engines.
     """
-    v = F.col(value_col)
+    v = F.col("value")
     finite = v.isNotNull() & ~F.isnan(v) & (F.abs(v) != F.lit(float("inf")))
-    ev = events.where(finite).select(*keys, v.alias("__v"))
-    stats = ev.groupBy(*keys).agg(
+    ev = events.where(finite).select("event_type", v.alias("__v"))
+    stats = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.percentile("__v", F.lit(0.25)).alias("__q1"),
         F.percentile("__v", F.lit(0.75)).alias("__q3"),
         F.avg("__v").alias("__mean"),
         F.stddev_samp("__v").alias("__sd"),
     )
-    lo = F.col("__q1") - k * (F.col("__q3") - F.col("__q1"))
-    hi = F.col("__q3") + k * (F.col("__q3") - F.col("__q1"))
-    joined = ev.join(F.broadcast(stats), list(keys))
+    lo = F.col("__q1") - 1.5 * (F.col("__q3") - F.col("__q1"))
+    hi = F.col("__q3") + 1.5 * (F.col("__q3") - F.col("__q1"))
+    joined = ev.join(F.broadcast(stats), ["event_type"])
     out_fence = (F.col("__v") < lo) | (F.col("__v") > hi)
     z3 = F.abs(F.col("__v") - F.col("__mean")) > 3 * F.col("__sd")
     return (
-        joined.groupBy(*keys)
+        joined.groupBy("event_type")
         .agg(
             F.first("n").alias("n"),
             F.round(F.first("__q1"), 6).alias("q1"),
@@ -73,7 +71,7 @@ def iqr_outlier_profile(
             ).alias("outlier_frac"),
             F.sum(F.coalesce(z3.cast("long"), F.lit(0))).alias("n_z3"),
         )
-        .orderBy(*keys)
+        .orderBy("event_type")
     )
 
 
@@ -113,17 +111,17 @@ FROM j GROUP BY event_type ORDER BY event_type
 """
 
 
-def equidepth_histogram(events: DataFrame, buckets: int = 4) -> DataFrame:
+def equidepth_histogram(events: DataFrame) -> DataFrame:
     """Per-``event_type`` EQUI-DEPTH histogram of ``value`` →
     ``(event_type, bucket, lo, hi, n)``:
-    bucket edges at the ``i/buckets`` interpolated quantiles, so each
+    bucket edges at the ``i/HIST_BUCKETS`` interpolated quantiles, so each
     bucket holds ~equal mass — the binning that stays readable on
     heavy-tailed measures where the fixed-width histogram dumps 99%
     of rows into one bar.
 
     Bucket assignment is the ORDER-FREE comparison sum
     ``1 + Σᵢ (v > edgeᵢ)`` — no interval containment tests, so
-    duplicate edges (a value owning more than 1/buckets of the mass)
+    duplicate edges (a value owning more than 1/HIST_BUCKETS of the mass)
     degrade deterministically to an empty bucket in BOTH engines
     instead of an engine-specific tie split.  ``lo``/``hi`` report
     the bucket's quantile edges (min/max of the key's finite values
@@ -136,8 +134,7 @@ def equidepth_histogram(events: DataFrame, buckets: int = 4) -> DataFrame:
     is a second partial agg — two shuffles total, none keyed on the
     value.
     """
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
+    buckets = HIST_BUCKETS
     v = F.col("value")
     finite = v.isNotNull() & ~F.isnan(v) & (F.abs(v) != F.lit(float("inf")))
     ev = events.where(finite).select("event_type", v.alias("__v"))
@@ -175,17 +172,17 @@ def equidepth_histogram_sql() -> str:
     """DuckDB twin of :func:`equidepth_histogram` — same quantile
     edges, same comparison-sum bucket rule."""
     edges = ",\n         ".join(
-        f"quantile_cont(__v, {i / 4:.17g}) AS __e{i}"
-        for i in range(1, 4)
+        f"quantile_cont(__v, {i / HIST_BUCKETS:.17g}) AS __e{i}"
+        for i in range(1, HIST_BUCKETS)
     )
     bucket_expr = " + ".join(
-        f"CAST(__v > __e{i} AS INT)" for i in range(1, 4)
+        f"CAST(__v > __e{i} AS INT)" for i in range(1, HIST_BUCKETS)
     )
     lo_arms = " ".join(
-        f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, 5)
+        f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, HIST_BUCKETS + 1)
     )
     hi_arms = " ".join(
-        f"WHEN bucket = {i} THEN __e{i}" for i in range(1, 5)
+        f"WHEN bucket = {i} THEN __e{i}" for i in range(1, HIST_BUCKETS + 1)
     )
     return f"""
 WITH ev AS (
@@ -194,7 +191,7 @@ WITH ev AS (
 ), stats AS (
   SELECT event_type, min(__v) AS __e0,
          {edges},
-         max(__v) AS __e4
+         max(__v) AS __e{HIST_BUCKETS}
   FROM ev GROUP BY event_type
 ), j AS (
   SELECT ev.*, stats.* EXCLUDE (event_type),

@@ -3,10 +3,8 @@ lacks natively, built as a composition of existing relational ops
 (SURVEY.md §2.12; the (a)-tier strategy: no Python in the data path).
 
 Semantics: for every left row, attach the single right row with the
-greatest ``on`` ≤ left.``on`` (direction="backward"; ties match) or
-the smallest ``on`` ≥ left.``on`` ("forward") within the same ``by``
-group (``on`` is ``ts``, ``by`` is ``user_id``), optionally bounded
-by ``tolerance``.  Unmatched left rows keep
+greatest ``ts`` ≤ left.``ts`` (ties match) within the same
+``user_id`` group.  Unmatched left rows keep
 NULL match columns (left-outer semantics) — the same contract as
 DuckDB's native ``ASOF LEFT JOIN``, which serves as the oracle twin.
 
@@ -22,7 +20,7 @@ offered: an as-of by definition needs per-key time ordering.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -30,24 +28,14 @@ from pyspark.sql import functions as F
 _MATCH_PREFIX = "asof_"
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    direction: str = "backward",
-    tolerance: Column | None = None,
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """As-of join ``left`` with ``right`` (see module docstring); the
     match columns come back prefixed ``asof_``.
 
-    ``tolerance`` — optional max time gap as a Column interval
-    (e.g. ``F.expr("INTERVAL 1 HOUR")``); matches farther than it are
-    nulled out.  Duplicate (user_id, ts) right rows collapse
-    deterministically (the lexicographically greatest payload wins)
-    so the match is well-defined.
+    Duplicate (user_id, ts) right rows collapse deterministically
+    (the lexicographically greatest payload wins) so the match is
+    well-defined.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
-
     r_payload = [c for c in right.columns if c not in {"user_id", "ts"}]
     # a right row with NULL ts can be "nearest" to nothing (the SQL
     # twin's inequality never matches it), but in the window
@@ -67,38 +55,22 @@ def asof_join(
     r = r.withColumn("__side", F.lit(0))
     u = l.unionByName(r, allowMissingColumns=True)
 
-    # Backward: right rows sort BEFORE a left row at the same instant
-    # (side 0 < 1) so equal timestamps match; running `last` carries
-    # the latest right payload forward.  Forward mirrors it in reverse.
-    if direction == "backward":
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy(F.asc("ts"), F.asc("__side"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-    else:
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy(F.desc("ts"), F.asc("__side"))
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
+    # Right rows sort BEFORE a left row at the same instant (side 0 <
+    # 1) so equal timestamps match; running `last` carries the latest
+    # right payload forward.
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.asc("ts"), F.asc("__side"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     matched = u.withColumn("__m", F.last("__rp", ignorenulls=True).over(w))
 
     out = matched.filter(F.col("__side") == 1)
     # NULL ts / NULL key → no match, matching the ASOF-join twin's
-    # SQL semantics (NULL compares with nothing).  Without this, a
-    # NULL-ts left row in the forward direction sorts past the last
-    # point (desc nulls last) and picks up the series MINIMUM, and
-    # NULL keys form a matching "group" the equality join never has.
+    # SQL semantics (NULL compares with nothing).  Without this, NULL
+    # keys form a matching "group" the equality join never has.
     valid = F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     out = out.withColumn("__m", F.when(valid, F.col("__m")))
-    if tolerance is not None:
-        gap_ok = (
-            F.col("ts") - F.col("__m.__t") <= tolerance
-            if direction == "backward"
-            else F.col("__m.__t") - F.col("ts") <= tolerance
-        )
-        out = out.withColumn("__m", F.when(gap_ok, F.col("__m")))
 
     keep = [c for c in left.columns]
     return out.select(

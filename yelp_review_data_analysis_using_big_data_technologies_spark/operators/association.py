@@ -24,11 +24,12 @@ from pyspark.sql import functions as F
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
 
 
-def cooccurrence_lift(
-    facts: DataFrame,
-    min_pair_n: int = 1,
-    max_items_per_key: int = 1000,
-) -> DataFrame:
+#: Entities holding more distinct items than this are excised from
+#: every count of :func:`cooccurrence_lift` (and its twin).
+FANOUT_CAP = 1000
+
+
+def cooccurrence_lift(facts: DataFrame) -> DataFrame:
     """Pairwise association rules →
     ``(item_a, item_b, n_ab, n_a, n_b, support, conf_a_b, conf_b_a,
     lift)`` ordered by (item_a, item_b), one row per unordered pair
@@ -39,7 +40,7 @@ def cooccurrence_lift(
     co-occurs more than independence predicts.  All ratios divide
     exact bigint counts in a fixed double order, so both engines
     produce identical bits.  NULL entities/items drop (no identity —
-    no basket); entities holding more than ``max_items_per_key``
+    no basket); entities holding more than ``FANOUT_CAP``
     distinct items are EXCLUDED from every count (marginals, total,
     and pairs stay mutually consistent — a capped entity vanishes
     from the universe rather than skewing lift)."""
@@ -53,7 +54,7 @@ def cooccurrence_lift(
     # consistently; staged — three downstream aggregates read it
     u = stage(
         per_entity.join(
-            fanout.where(F.col("__k") <= max_items_per_key).select("__e"),
+            fanout.where(F.col("__k") <= FANOUT_CAP).select("__e"),
             on="__e",
         ).select("__e", "__i")
     )
@@ -65,7 +66,6 @@ def cooccurrence_lift(
         .where(F.col("l.__i") < F.col("r.__i"))
         .groupBy(F.col("l.__i").alias("item_a"), F.col("r.__i").alias("item_b"))
         .agg(F.count(F.lit(1)).alias("n_ab"))
-        .where(F.col("n_ab") >= min_pair_n)
     )
     ma = marginals.select(F.col("__i").alias("item_a"), F.col("__ni").alias("n_a"))
     mb = marginals.select(F.col("__i").alias("item_b"), F.col("__ni").alias("n_b"))
@@ -99,7 +99,7 @@ def cooccurrence_lift(
 def cooccurrence_lift_sql() -> str:
     """DuckDB twin of :func:`cooccurrence_lift` — same distinct
     relation, same fan-out cap, same fixed division order."""
-    return """
+    return f"""
 WITH pe AS (
   SELECT DISTINCT user_id AS __e, event_type AS __i
   FROM events
@@ -108,7 +108,7 @@ WITH pe AS (
   SELECT __e, __i FROM pe
   WHERE __e IN (
     SELECT __e FROM pe GROUP BY __e
-    HAVING count(*) <= 1000
+    HAVING count(*) <= {FANOUT_CAP}
   )
 ), tot AS (
   SELECT count(DISTINCT __e) AS __n FROM u

@@ -219,23 +219,14 @@ def bloom_pruned_join(
     *,
     fact_key: str,
     dim_key: str,
-    how: str = "inner",
     num_bits: int = DEFAULT_NUM_BITS,
     num_hashes: int = DEFAULT_NUM_HASHES,
 ) -> DataFrame:
-    """``fact ⋈ dim`` with a Bloom pre-filter on the fact side.
-
-    Only ``inner`` and ``left_semi`` are legal: for those, dropping
-    fact rows that provably cannot match preserves the result exactly
-    (no false negatives).  Any outer flavor would lose null-extended
-    rows and is rejected loudly.
+    """Inner ``fact ⋈ dim`` with a Bloom pre-filter on the fact side:
+    dropping fact rows that provably cannot match preserves the inner
+    join exactly (no false negatives).  An outer flavor would lose
+    null-extended rows, so none is offered.
     """
-    if how not in ("inner", "left_semi", "semi", "leftsemi"):
-        raise ValueError(
-            f"bloom_pruned_join supports inner/left_semi only, got {how!r}: "
-            "pruning the probe side of an outer join drops null-extended "
-            "rows"
-        )
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
 
     # Staged (r11 advice): the sketch plan is a full dim scan +
@@ -249,4 +240,4 @@ def bloom_pruned_join(
     pruned = bloom_prune(
         fact, fact_key, sketch, num_bits=num_bits, num_hashes=num_hashes
     )
-    return pruned.join(dim, pruned[fact_key] == dim[dim_key], how)
+    return pruned.join(dim, pruned[fact_key] == dim[dim_key], "inner")

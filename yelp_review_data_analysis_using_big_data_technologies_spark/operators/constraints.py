@@ -16,11 +16,10 @@ Violation semantics (pinned by the oracle twins):
 - unique: rows belonging to a key group with more than one row
   (i.e. ALL rows of every duplicated key).
 - foreign key: NON-NULL child rows with no matching parent key
-  (left-anti count).  ``ignore_nulls=True`` by default — the dbt
+  (left-anti count).  NULL child keys are skipped — the dbt
   relationships-test convention (a NULL child key is a missing
   reference, not a broken one; declare a separate not-null rule if
-  NULLs are illegal).  Pass ``ignore_nulls=False`` for the strict
-  count that treats NULL children as orphans.
+  NULLs are illegal).
 - accepted values: NON-NULL values outside the allow-list (NULL is a
   missing value, not an illegal one — again a separate not-null rule).
 - not null: NULL rows in the column.
@@ -51,15 +50,12 @@ def fk_violations(
     parent: DataFrame,
     parent_key: str,
     rule: str,
-    ignore_nulls: bool = True,
 ) -> DataFrame:
     """Child rows with no matching parent (orphans) — one left-anti
     join on the key; at scale the parent side projects to the single
-    key column before shuffling.  NULL child keys are skipped by
-    default (dbt relationships-test convention; see module docstring);
-    ``ignore_nulls=False`` counts them as orphans."""
-    if ignore_nulls:
-        child = child.filter(F.col(child_key).isNotNull())
+    key column before shuffling.  NULL child keys are skipped (dbt
+    relationships-test convention; see module docstring)."""
+    child = child.filter(F.col(child_key).isNotNull())
     orphans = child.select(F.col(child_key)).join(
         parent.select(F.col(parent_key).alias(child_key)).distinct(),
         on=child_key,

@@ -42,12 +42,12 @@ def decay_weight(ts_col: Column | str, anchor_us: Column, half_life_s: float) ->
     return F.exp(dt_us.cast("double") * F.lit(rate))
 
 
-def ewma_by_key(
-    events: DataFrame,
-    keys: Sequence[str],
-    half_life_s: float = 7 * 24 * 3600.0,
-) -> DataFrame:
-    """Per-key EWMA of ``value`` anchored at the table's max
+#: EWMA half-life of :func:`ewma_by_key` and its twin: one week.
+HALF_LIFE_S = 7 * 24 * 3600.0
+
+
+def ewma_by_key(events: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """Per-key EWMA of ``value`` (half-life ``HALF_LIFE_S``) anchored at the table's max
     ``ts`` (the "now" of the dataset), plus the plain average for
     contrast and the effective sample size ``(Σw)²/Σw²`` (how many
     "fully-weighted" events the decayed estimate is worth — the
@@ -66,7 +66,7 @@ def ewma_by_key(
             "__anchor_us"
         )
     )
-    w = decay_weight("ts", F.col("__anchor_us"), half_life_s)
+    w = decay_weight("ts", F.col("__anchor_us"), HALF_LIFE_S)
     v = F.col("value")
     valid = v.isNotNull() & F.col("ts").isNotNull()
     weighted = events.join(F.broadcast(anchor)).select(
@@ -93,7 +93,7 @@ def ewma_by_key_sql(table: str = "events") -> str:
     """DuckDB twin — identical arithmetic over ``epoch_us`` integers
     (value AND weight guarded to rows where both value and timestamp
     are non-NULL, exactly like the Spark side)."""
-    rate = repr(math.log(0.5) / ((7 * 24 * 3600.0) * 1_000_000.0))
+    rate = repr(math.log(0.5) / (HALF_LIFE_S * 1_000_000.0))
     valid = "value IS NOT NULL AND ts IS NOT NULL"
     return f"""
 WITH anchored AS (

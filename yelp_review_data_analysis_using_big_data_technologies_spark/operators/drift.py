@@ -62,6 +62,12 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
 
 _FINITE = lambda c: c.isNotNull() & ~F.isnan(c) & (F.abs(c) != F.lit(float("inf")))  # noqa: E731
 
+#: Reference-quantile buckets of the PSI profile (and its twin).
+PSI_BUCKETS = 10
+
+#: Value buckets of the KS two-level prefix sum.
+KS_BUCKETS = 32
+
 
 def psi_profile_sql(ref_sql: str, cur_sql: str) -> str:
     """DuckDB twin of :func:`psi_profile_frozen` over
@@ -71,13 +77,13 @@ def psi_profile_sql(ref_sql: str, cur_sql: str) -> str:
     total.  ``ref_sql``/``cur_sql`` are subqueries projecting
     ``value``."""
     edges = ",\n         ".join(
-        f"quantile_cont(__v, {i / 10:.17g}) AS __e{i}"
-        for i in range(1, 10)
+        f"quantile_cont(__v, {i / PSI_BUCKETS:.17g}) AS __e{i}"
+        for i in range(1, PSI_BUCKETS)
     )
-    bucket_expr = " + ".join(f"CAST(__v > __e{i} AS INT)" for i in range(1, 10))
-    lo_arms = " ".join(f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, 11))
-    hi_arms = " ".join(f"WHEN bucket = {i} THEN __e{i}" for i in range(1, 11))
-    half = 5.0
+    bucket_expr = " + ".join(f"CAST(__v > __e{i} AS INT)" for i in range(1, PSI_BUCKETS))
+    lo_arms = " ".join(f"WHEN bucket = {i} THEN __e{i - 1}" for i in range(1, PSI_BUCKETS + 1))
+    hi_arms = " ".join(f"WHEN bucket = {i} THEN __e{i}" for i in range(1, PSI_BUCKETS + 1))
+    half = PSI_BUCKETS / 2.0
     return f"""
 WITH r AS (
   SELECT value AS __v FROM ({ref_sql})
@@ -133,13 +139,13 @@ FROM termed ORDER BY bucket
 """
 
 
-def psi_freeze_reference(ref: DataFrame, buckets: int = 10) -> dict:
+def psi_freeze_reference(ref: DataFrame) -> dict:
     """Collect the reference's frozen PSI profile — raw quantile
     edges plus per-bucket reference counts — as driver-side literals
-    (≤ ``buckets + 1`` doubles + ``buckets`` longs: the bounded
+    (``PSI_BUCKETS + 1`` doubles + ``PSI_BUCKETS`` longs: the bounded
     codebook/centroid class of collect, NOT a data collect).
 
-    Bucket edges are the ``i/buckets`` interpolated quantiles of the
+    Bucket edges are the ``i/PSI_BUCKETS`` interpolated quantiles of the
     REFERENCE (the PSI convention — the monitor asks "did the new
     data leave the old data's shape", so the binning must not move
     with the new data).  The reference snapshot is scanned here ONCE;
@@ -147,8 +153,7 @@ def psi_freeze_reference(ref: DataFrame, buckets: int = 10) -> dict:
     side, which is what lets a monitor score each micro-batch at a
     cost ∝ batch.  Raw (unrounded) edge doubles are kept; the scorer
     rounds ``lo``/``hi`` in Spark."""
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
+    buckets = PSI_BUCKETS
     v = F.col("value")
     r = ref.where(_FINITE(v)).select(v.alias("__v"))
     qs = [i / buckets for i in range(1, buckets)]
@@ -172,7 +177,6 @@ def psi_freeze_reference(ref: DataFrame, buckets: int = 10) -> dict:
     return {
         "edges": edges,
         "ref_counts": [counts.get(b, 0) for b in range(1, buckets + 1)],
-        "buckets": buckets,
     }
 
 
@@ -193,7 +197,7 @@ def psi_profile_frozen(cur: DataFrame, frozen: dict) -> DataFrame:
     smoothed ``(n + 0.5)/(N + buckets/2)`` so one-sided and empty
     buckets stay finite.  ``psi_total`` repeats the decimal-summed
     total on every row."""
-    buckets = int(frozen["buckets"])
+    buckets = PSI_BUCKETS
     edges = frozen["edges"]
     ref_counts = frozen["ref_counts"]
     v = F.col("value")
@@ -274,7 +278,7 @@ def ks_side_counts(df: DataFrame, out_col: str = "__an") -> DataFrame:
     )
 
 
-def ks_2sample(a_counts: DataFrame, b: DataFrame, buckets: int = 32) -> DataFrame:
+def ks_2sample(a_counts: DataFrame, b: DataFrame) -> DataFrame:
     """Exact two-sample KS statistic between the reference side
     ``a`` — given as its :func:`ks_side_counts` — and the sample
     ``b`` → ONE row ``(ks_stat, ks_at, n_a, n_b)``: the max CDF gap,
@@ -288,8 +292,7 @@ def ks_2sample(a_counts: DataFrame, b: DataFrame, buckets: int = 32) -> DataFram
     doc); the argmax compares ``|cum_a·N_b − cum_b·N_a|`` in
     DECIMAL(38,0) so no float rounding can flip the winner.  Empty
     sides yield a NULL statistic rather than a division by zero."""
-    if buckets < 2:
-        raise ValueError(f"buckets must be >= 2, got {buckets}")
+    buckets = KS_BUCKETS
     # b's counts merge with the reference counts by value: full-outer
     # + coalesce(0) gives the integer rows a union+aggregate of both
     # raw sides would.  Staged: the distinct-value relation feeds the

@@ -2,11 +2,11 @@
 method (Hernández & Stolfo, SIGMOD'95) — the entity-resolution
 strategy that scales where a naive edit-distance join is N².
 
-Candidates are pairs within ``window`` positions of each other in the
+Candidates are pairs within 3 positions of each other in the
 sort order of the match key WITHIN a blocking key: the window
 partitions by block and sorts by key, so ``lead(key, i)`` for i in
-1..window pairs each row with its next ``window`` neighbors —
-candidate count is exactly ``N·window``, linear in N, and the shuffle
+1..3 pairs each row with its next 3 neighbors —
+candidate count is exactly ``3·N``, linear in N, and the shuffle
 key is the block (ordinary hash partitioning, no global sort).
 Verification is exact ``levenshtein ≤ k``, which Spark and DuckDB
 implement with the same unrestricted-edit-distance DP, so the oracle
@@ -15,7 +15,7 @@ twin agrees exactly.
 Two recall trades define the method, both deliberate:
 - pairs in DIFFERENT blocks are never candidates (choose a block the
   expected duplicates agree on — a prefix, soundex, zip code);
-- within a block, only pairs ≤ ``window`` apart in sort order are
+- within a block, only pairs ≤ 3 apart in sort order are
   candidates (prefix typos move a record far away in the order).
 The standard upgrade for both is multi-pass: re-run with different
 block/sort keys and union the results — it composes from this same
@@ -33,15 +33,12 @@ def fuzzy_pairs_sorted_neighborhood(
     df: DataFrame,
     id_col: str,
     key_col: str,
-    window: int = 3,
     block_col: Column | str | None = None,
 ) -> DataFrame:
     """Pairs ``(id_a, id_b, distance)`` with edit distance ≤ 1 among
-    rows within ``window`` positions in
+    rows within 3 positions in
     ``key_col``'s sort order inside each block (ties broken by id —
     deterministic for unique (key, id))."""
-    if window < 1:
-        raise ValueError("window must be >= 1")
     # NULLS FIRST explicitly on both sort keys: Spark's ASC default,
     # but the SQL twin must pin the same (DuckDB defaults NULLS LAST),
     # else a NULL id tie-breaking among duplicate keys lands on the
@@ -63,7 +60,7 @@ def fuzzy_pairs_sorted_neighborhood(
             F.lead(id_col, i).over(w).alias("nid"),
             F.lead(key_col, i).over(w).alias("nkey"),
         )
-        for i in range(1, window + 1)
+        for i in range(1, 4)
     ]
     paired = (
         base.withColumn("__nbrs", F.array(*cols))

@@ -37,8 +37,14 @@ from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import stage
 
-DEFAULT_ITERATIONS = 5
-DEFAULT_DAMPING = 0.85
+#: PageRank update steps and damping, shared with the twin's unroll.
+ITERATIONS = 5
+DAMPING = 0.85
+
+#: k-core peel: keep nodes of degree >= ``CORE_K``, for ``PEEL_ROUNDS``
+#: rounds (the twin unrolls the same rounds).
+CORE_K = 2
+PEEL_ROUNDS = 6
 
 
 def _loop_width(n_pairs: int, parallelism: int) -> int:
@@ -50,16 +56,9 @@ def _loop_width(n_pairs: int, parallelism: int) -> int:
     return max(1, min(parallelism, -(-2 * n_pairs // 2_000_000)))
 
 
-def pagerank(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    iterations: int = DEFAULT_ITERATIONS,
-    damping: float = DEFAULT_DAMPING,
-    checkpoint_every: int | None = 1,
-    weight: str | None = None,
-) -> DataFrame:
-    """PageRank over the undirected graph of ``pairs`` →
+def pagerank(pairs: DataFrame, weight: str | None = None) -> DataFrame:
+    """``ITERATIONS`` PageRank steps (damping ``DAMPING``) over the
+    undirected graph of ``pairs`` (``id_a``, ``id_b``) →
     ``(id, degree, rank)`` with ``rank`` rounded to 6 dp at the END
     only (intermediate ranks stay full-precision double in BOTH
     engines; per-iteration rounding would compound).
@@ -81,11 +80,7 @@ def pagerank(
     weighted normalizer is internal).  ``weight=None`` is exactly the
     unweighted update (divide by degree), bit-for-bit unchanged.
     """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if not (0.0 < damping < 1.0):
-        raise ValueError(f"damping must be in (0, 1), got {damping}")
-    a, b = F.col(id_a), F.col(id_b)
+    a, b = F.col("id_a"), F.col("id_b")
     # Materialize the (possibly expensive) pair relation ONCE before
     # the symmetrizing union: both union branches reference it, so an
     # un-materialized relation executes the caller's full pair plan —
@@ -107,7 +102,7 @@ def pagerank(
     # should checkpoint to reliable storage instead.
     base = (
         pairs.where(a.isNotNull() & b.isNotNull() & (a != b))
-        .select(*([id_a, id_b] if weight is None else [id_a, id_b, weight]))
+        .select("id_a", "id_b", *([] if weight is None else [weight]))
         .localCheckpoint(eager=True)
     )
     # Size-derived partition count for the loop relations (r16, the
@@ -213,7 +208,7 @@ def pagerank(
         else F.col("__r") * F.col("__w") / F.col("__wsum")
     )
     rank = deg.select("id", (F.lit(1.0) / F.lit(n_nodes)).alias("__r"))
-    for it in range(iterations):
+    for _ in range(ITERATIONS):
         contrib = (
             edges_w.join(rank, edges_w["__src"] == rank["id"])
             .groupBy("__dst")
@@ -224,25 +219,24 @@ def pagerank(
         ).select(
             "id",
             (
-                F.lit(1.0 - damping) / F.lit(n_nodes)
-                + F.lit(damping) * F.coalesce(F.col("__contrib"), F.lit(0.0))
+                F.lit(1.0 - DAMPING) / F.lit(n_nodes)
+                + F.lit(DAMPING) * F.coalesce(F.col("__contrib"), F.lit(0.0))
             ).alias("__r"),
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            # Eager localCheckpoint, NOT persist (r15 opt — the k_core /
-            # BPE lesson, guide §1.2): persist caches execution but not
-            # the logical plan, so a K-round chain still re-analyzes a
-            # K-deep nested plan and executes as ONE monolithic
-            # ~3K-exchange AQE query; checkpointing the |V|-row rank
-            # relation each round makes every round a small flat job
-            # (measured: the 5-round loop dropped from ~12 s to ~3 s at
-            # sf0.1 while k_core's checkpointed 6-round peel was already
-            # ~6× faster per round on the same graph).  Same per-round
-            # arithmetic, bitwise-identical ranks.  The r16 coalesce
-            # right-sizes the CHECKPOINTED width the same way as the
-            # staged loop relations above (the |V|-row rank frame was
-            # materializing at the session shuffle width).
-            rank = rank.coalesce(p_loop).localCheckpoint(eager=True)
+        # Eager localCheckpoint, NOT persist (the k_core / BPE
+        # lesson): persist caches execution but not
+        # the logical plan, so a K-round chain still re-analyzes a
+        # K-deep nested plan and executes as ONE monolithic
+        # ~3K-exchange AQE query; checkpointing the |V|-row rank
+        # relation each round makes every round a small flat job
+        # (measured: the 5-round loop dropped from ~12 s to ~3 s at
+        # sf0.1 while k_core's checkpointed 6-round peel was already
+        # ~6× faster per round on the same graph).  Same per-round
+        # arithmetic, bitwise-identical ranks.  The coalesce
+        # right-sizes the CHECKPOINTED width the same way as the
+        # staged loop relations above (the |V|-row rank frame was
+        # materializing at the session shuffle width).
+        rank = rank.coalesce(p_loop).localCheckpoint(eager=True)
     return (
         deg.join(rank, "id")
         .select("id", "degree", F.round("__r", 6).alias("rank"))
@@ -390,7 +384,6 @@ ORDER BY {id_out}
 
 def pagerank_sql(
     pairs_sql: str,
-    iterations: int = DEFAULT_ITERATIONS,
     id_out: str = "id",
     weight: str | None = None,
 ) -> str:
@@ -401,17 +394,17 @@ def pagerank_sql(
     recursive CTEs disallow).  ``weight`` mirrors the operator's
     weighted update (share = r·w/Σw, max-merge of duplicate edge
     spellings)."""
-    teleport = f"({1.0 - DEFAULT_DAMPING:.17g} / (SELECT n FROM n))"
+    teleport = f"({1.0 - DAMPING:.17g} / (SELECT n FROM n))"
     share = (
         "r{k}.r / deg.degree"
         if weight is None
         else "r{k}.r * e.w / deg.wsum"
     )
     steps = []
-    for k in range(iterations):
+    for k in range(ITERATIONS):
         steps.append(
             f"r{k + 1} AS (\n"
-            f"  SELECT deg.id, {teleport} + {DEFAULT_DAMPING:.17g} * "
+            f"  SELECT deg.id, {teleport} + {DAMPING:.17g} * "
             f"coalesce(s.contrib, 0.0) AS r\n"
             f"  FROM deg LEFT JOIN (\n"
             f"    SELECT e.dst AS id, sum({share.format(k=k)}) AS contrib\n"
@@ -461,22 +454,17 @@ deg AS ({deg}),
 n AS (SELECT count(*) AS n FROM deg),
 r0 AS (SELECT id, 1.0 / (SELECT n FROM n) AS r FROM deg),
 {chain}
-SELECT deg.id AS {id_out}, deg.degree, round(r{iterations}.r, 6) AS rank
-FROM deg JOIN r{iterations} ON deg.id = r{iterations}.id
+SELECT deg.id AS {id_out}, deg.degree, round(r{ITERATIONS}.r, 6) AS rank
+FROM deg JOIN r{ITERATIONS} ON deg.id = r{ITERATIONS}.id
 ORDER BY rank DESC, {id_out} ASC
 """
 
 
-def k_core(
-    pairs: DataFrame,
-    k: int = 2,
-    iterations: int = 6,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Fixed-iteration k-core peel over the undirected pair relation →
-    ``(id, degree)`` of the nodes surviving ``iterations`` rounds of
-    "delete every node with degree < k", with their residual degree —
+def k_core(pairs: DataFrame) -> DataFrame:
+    """Fixed-iteration k-core peel over the undirected pair relation
+    (``id_a``, ``id_b``) → ``(id, degree)`` of the nodes surviving
+    ``PEEL_ROUNDS`` rounds of "delete every node with degree <
+    ``CORE_K``", with their residual degree —
     the density filter that separates clique-shaped duplicate blobs
     from incidental chains before expensive per-cluster work (a chain
     A~B~C has no 2-core; a triangle is one).
@@ -485,8 +473,8 @@ def k_core(
     that is what makes the DuckDB twin expressible as an unrolled CTE
     chain (recursive CTEs disallow the per-round aggregation), and
     peeling converges geometrically on real graphs — on chains, the
-    worst case, each round removes both endpoints, so ``iterations``
-    rounds fully resolve any component of diameter ≤ 2·iterations.
+    worst case, each round removes both endpoints, so ``PEEL_ROUNDS``
+    rounds fully resolve any component of diameter ≤ 2·PEEL_ROUNDS.
     Nodes NOT yet converged after the last round simply report their
     current residual degree (may be < k); both engines stop at the
     same round, so the twin hashes identically regardless.
@@ -497,30 +485,26 @@ def k_core(
     monotonically.  Each round ends in ``localCheckpoint`` — NOT
     ``persist``: the next round references the edge relation ~5 times
     (two degree legs feeding the keep-set that both semi joins
-    consume), so an uncut lineage grows 5^iterations and stalls the
+    consume), so an uncut lineage grows 5^PEEL_ROUNDS and stalls the
     ANALYZER before any data moves (the MMR plan-blow-up lesson;
     persist caches execution but not the logical plan).  Dirty edges
     (NULL endpoints, self-loops, duplicate/swapped spellings)
     canonicalize under the :func:`pagerank` contract."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    a, b = F.col(id_a), F.col(id_b)
+    a, b = F.col("id_a"), F.col("id_b")
     edges = (
         pairs.where(a.isNotNull() & b.isNotNull() & (a != b))
         .select(F.least(a, b).alias("__a"), F.greatest(a, b).alias("__b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(iterations):
+    for _ in range(PEEL_ROUNDS):
         deg = (
             edges.select(F.col("__a").alias("id"))
             .unionAll(edges.select(F.col("__b").alias("id")))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("degree"))
         )
-        keep = deg.where(F.col("degree") >= k).select("id")
+        keep = deg.where(F.col("degree") >= CORE_K).select("id")
         edges = (
             edges.join(
                 keep.withColumnRenamed("id", "__a"), on="__a", how="left_semi"
@@ -540,13 +524,13 @@ def k_core(
 
 
 def k_core_sql(pairs_sql: str, id_out: str = "id") -> str:
-    """DuckDB twin of :func:`k_core` at its defaults (k = 2, 6 peel
-    rounds) — the same peel rounds unrolled
+    """DuckDB twin of :func:`k_core` (``CORE_K``, ``PEEL_ROUNDS``) —
+    the same peel rounds unrolled
     as chained MATERIALIZED CTEs (each round's edge relation is
     referenced three times — two degree legs + the next filter — and
     an inlined chain re-evaluates exponentially, the MMR lesson)."""
     steps = []
-    for t in range(6):
+    for t in range(PEEL_ROUNDS):
         steps.append(
             f"d{t} AS MATERIALIZED (\n"
             f"  SELECT id, count(*) AS degree FROM (\n"
@@ -554,7 +538,7 @@ def k_core_sql(pairs_sql: str, id_out: str = "id") -> str:
             f"    UNION ALL SELECT __b AS id FROM e{t}\n"
             f"  ) GROUP BY id\n"
             f"), kset{t} AS MATERIALIZED (\n"
-            f"  SELECT id FROM d{t} WHERE degree >= 2\n"
+            f"  SELECT id FROM d{t} WHERE degree >= {CORE_K}\n"
             f"), e{t + 1} AS MATERIALIZED (\n"
             f"  SELECT e{t}.* FROM e{t}\n"
             f"  JOIN kset{t} ka ON e{t}.__a = ka.id\n"
@@ -571,7 +555,7 @@ WITH canon AS MATERIALIZED (
 ), e0 AS MATERIALIZED (SELECT * FROM canon),
 {chain}
 SELECT id AS {id_out}, CAST(count(*) AS BIGINT) AS degree FROM (
-  SELECT __a AS id FROM e6
-  UNION ALL SELECT __b AS id FROM e6
+  SELECT __a AS id FROM e{PEEL_ROUNDS}
+  UNION ALL SELECT __b AS id FROM e{PEEL_ROUNDS}
 ) GROUP BY id ORDER BY id
 """

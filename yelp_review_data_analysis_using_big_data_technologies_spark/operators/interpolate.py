@@ -10,9 +10,8 @@ return the linear interpolation::
     v(t) = prev.v + (next.v − prev.v) · (t − prev.ts) / (next.ts − prev.ts)
 
 An exact-timestamp hit returns that point's value.  Outside the series
-range the result clamps to the nearest endpoint (``extrapolate=
-"clamp"``, numpy.interp's contract) or stays NULL (``"null"``).
-Queries whose key has no series rows at all are NULL either way
+range the result clamps to the nearest endpoint (numpy.interp's
+contract).  Queries whose key has no series rows at all are NULL
 (left-outer contract, matching the as-of join).  A NULL query
 timestamp or NULL ``by`` key is NULL, full stop — SQL join semantics
 (NULL matches nothing), pinned explicitly because the window
@@ -36,18 +35,11 @@ from pyspark.sql import functions as F
 
 
 
-def interpolate_join(
-    queries: DataFrame,
-    series: DataFrame,
-    extrapolate: str = "clamp",
-) -> DataFrame:
+def interpolate_join(queries: DataFrame, series: DataFrame) -> DataFrame:
     """Attach ``interp_value`` = the series' linearly-interpolated
     value at each query row's ``ts`` (see module docstring).  Duplicate
     series points at one ``(user_id, ts)`` instant collapse
     deterministically to the greatest value first."""
-    if extrapolate not in ("clamp", "null"):
-        raise ValueError("extrapolate must be 'clamp' or 'null'")
-
     # a series point with NULL ts belongs to no position on the time
     # axis — drop it (same reasoning as asof_join's right-side filter)
     series = series.filter(F.col("ts").isNotNull())
@@ -91,11 +83,13 @@ def interpolate_join(
     pt, pv = F.col("__prev.__t"), F.col("__prev.__v")
     nt, nv = F.col("__next.__t"), F.col("__next.__v")
     lerp = pv + (nv - pv) * (t - pt) / (nt - pt)
-    interp = F.when(pt.isNotNull() & nt.isNotNull() & (nt != pt), lerp).when(
-        pt.isNotNull() & nt.isNotNull(), pv
+    # outside the series range: clamp to the nearest endpoint
+    interp = (
+        F.when(pt.isNotNull() & nt.isNotNull() & (nt != pt), lerp)
+        .when(pt.isNotNull() & nt.isNotNull(), pv)
+        .when(pt.isNotNull(), pv)
+        .when(nt.isNotNull(), nv)
     )
-    if extrapolate == "clamp":
-        interp = interp.when(pt.isNotNull(), pv).when(nt.isNotNull(), nv)
     # NULL ts / NULL key → NULL (module docstring): without this guard
     # a NULL-ts query row clamps to the series extremum and NULL keys
     # interpolate against the NULL-key "group"
@@ -110,7 +104,7 @@ def interpolate_join_sql(
     series_sql: str,
     query_cols: str = "q.*",
 ) -> str:
-    """DuckDB twin of the default (``extrapolate="clamp"``) join:
+    """DuckDB twin of :func:`interpolate_join` (clamping):
     backward + forward native ASOF joins feeding the SAME lerp expression (``epoch_us`` integers, identical operation
     order) as :func:`interpolate_join`.  ``query_cols`` defaults to
     ``q.*`` — the Spark twin returns exactly the query columns, and a

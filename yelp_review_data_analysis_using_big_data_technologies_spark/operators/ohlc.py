@@ -30,8 +30,6 @@ EWMA null-contract fix.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,23 +38,14 @@ from pyspark.sql import functions as F
 _NULL_ID_SENTINEL = -(2**62)
 
 
-def ohlc_bars(
-    events: DataFrame,
-    keys: Sequence[str] = ("event_type",),
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    bucket: str = "hour",
-) -> DataFrame:
-    """Per-key OHLC bars at ``date_trunc(bucket)`` granularity:
-    ``(keys…, bucket_ts, open, high, low, close, n_events,
-    total_value, mean_value)``, ordered by (keys, bucket_ts).
-
-    ``bucket`` is any ``date_trunc`` unit both engines accept
-    (``'hour'``, ``'day'``, ``'week'``, …).
+def ohlc_bars(events: DataFrame) -> DataFrame:
+    """Per-``event_type`` hourly OHLC bars of ``value`` (ties broken
+    by ``event_id``): ``(event_type, bucket_ts, open, high, low,
+    close, n_events, total_value, mean_value)``, ordered by
+    (event_type, bucket_ts).
     """
-    ts = F.col(ts_col)
-    v = F.col(value_col)
+    ts = F.col("ts")
+    v = F.col("value")
     valid = (
         ts.isNotNull()
         & v.isNotNull()
@@ -64,15 +53,15 @@ def ohlc_bars(
         & (F.abs(v) != F.lit(float("inf")))
     )
     staged = events.where(valid).select(
-        *keys,
-        F.date_trunc(bucket, ts).alias("bucket_ts"),
+        "event_type",
+        F.date_trunc("hour", ts).alias("bucket_ts"),
         ts.alias("__ts"),
-        F.coalesce(F.col(id_col), F.lit(_NULL_ID_SENTINEL)).alias("__id"),
+        F.coalesce(F.col("event_id"), F.lit(_NULL_ID_SENTINEL)).alias("__id"),
         v.alias("__v"),
     )
     sel = F.struct("__ts", "__id", "__v")
     return (
-        staged.groupBy(*keys, "bucket_ts")
+        staged.groupBy("event_type", "bucket_ts")
         .agg(
             F.min(sel).getField("__v").alias("open"),
             F.max("__v").alias("high"),
@@ -82,7 +71,7 @@ def ohlc_bars(
             F.round(F.sum("__v"), 6).alias("total_value"),
             F.round(F.avg("__v"), 6).alias("mean_value"),
         )
-        .orderBy(*keys, "bucket_ts")
+        .orderBy("event_type", "bucket_ts")
     )
 
 

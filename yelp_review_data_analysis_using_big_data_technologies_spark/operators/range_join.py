@@ -32,19 +32,14 @@ def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
     by: str | list[str] | None = None,
-    l_start: str = "l_start",
-    l_end: str = "l_end",
-    r_start: str = "r_start",
-    r_end: str = "r_end",
-    bucket_seconds: int = 3600,
 ) -> DataFrame:
     """INTERVAL × INTERVAL overlap join (the sibling of
     :func:`range_join`'s point-in-interval): every (left, right) pair
-    whose half-open spans ``[start, end)`` intersect, key-scoped by
-    ``by``, with ``overlap_seconds`` attached.
+    whose half-open spans ``[l_start, l_end)`` / ``[r_start, r_end)``
+    intersect, key-scoped by ``by``, with ``overlap_seconds`` attached.
 
-    Same bucketization trick — both sides explode into the time
-    buckets they cover and the join runs as a hash join on
+    Same bucketization trick — both sides explode into the one-hour
+    time buckets they cover and the join runs as a hash join on
     (keys…, bucket) + the exact predicate ``l_s < r_e AND r_s < l_e``
     — plus the classic FIRST-OVERLAPPING-CELL dedup: a pair sharing
     several buckets is emitted only in the bucket
@@ -65,7 +60,7 @@ def interval_overlap_join(
         raise ValueError(
             f"non-key columns must be disjoint; rename {sorted(clash)}"
         )
-    bucket_us = bucket_seconds * 1_000_000
+    bucket_us = 3600 * 1_000_000
 
     def _us(c):
         # TIMESTAMP_NTZ-proof (the decay.py idiom; session pins UTC)
@@ -92,8 +87,8 @@ def interval_overlap_join(
                 ),
             )
         )
-    l = _prep(left, l_start, l_end)
-    r = _prep(right, r_start, r_end)
+    l = _prep(left, "l_start", "l_end")
+    r = _prep(right, "r_start", "r_end")
     cond = [l["__b"] == r["__b"]] + [l[c] == r[c] for c in by_cols]
     joined = (
         l.join(r, cond, "inner")
@@ -123,14 +118,10 @@ def range_join(
     end: str = "end",
     by: str | list[str] | None = None,
     bucket_seconds: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
-    """Join each ``points`` row to every ``intervals`` row whose
-    ``[start, end]`` contains its ``ts`` (closed on both ends), optionally
-    key-scoped by ``by``.  ``how`` may be ``inner`` or ``left`` (left
-    keeps pointless points with NULL interval columns)."""
-    if how not in ("inner", "left"):
-        raise ValueError("how must be 'inner' or 'left'")
+    """Inner join of each ``points`` row to every ``intervals`` row
+    whose ``[start, end]`` contains its ``ts`` (closed on both ends),
+    optionally key-scoped by ``by``."""
     by_cols = cols_list(by)
     clash = (set(points.columns) & set(intervals.columns)) - set(by_cols)
     if clash:
@@ -141,22 +132,7 @@ def range_join(
     def _bucket(c):
         return (F.unix_timestamp(F.col(c)) / bucket_seconds).cast("long")
 
-    pts = points
-    if how == "left":
-        # surrogate row id: the unmatched-recovery anti-join below must
-        # match a point row to ITSELF, which value-equality can't do
-        # when any column is NULL (a matched row with a NULL column
-        # would come back a second time as unmatched).  The id MUST be
-        # materialized before the plan branches: the matched plan and
-        # the anti-join side would otherwise evaluate
-        # monotonically_increasing_id independently, and a
-        # nondeterministically-ordered upstream (anything post-shuffle)
-        # could number the same row differently in the two branches —
-        # dropping matched rows or duplicating unmatched ones.
-        pts = points.withColumn(
-            "__pid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-    p = pts.withColumn("__b", _bucket("ts"))
+    p = points.withColumn("__b", _bucket("ts"))
     i = intervals.withColumn(
         "__b",
         F.explode(F.sequence(_bucket(start), _bucket(end))),
@@ -169,16 +145,4 @@ def range_join(
         [p[c] for c in points.columns]
         + [i[c] for c in intervals.columns if c not in by_cols]
     )
-    if how == "inner":
-        return joined.select(*out_cols)
-    # left: re-attach unmatched points (by surrogate id, null-safe)
-    matched = joined.select(p["__pid"], *out_cols)
-    unmatched = pts.join(
-        matched.select("__pid").distinct(), on="__pid", how="left_anti"
-    ).drop("__pid")
-    for c in intervals.columns:
-        if c not in by_cols:
-            unmatched = unmatched.withColumn(
-                c, F.lit(None).cast(dict(intervals.dtypes)[c])
-            )
-    return matched.drop("__pid").unionByName(unmatched)
+    return joined.select(*out_cols)

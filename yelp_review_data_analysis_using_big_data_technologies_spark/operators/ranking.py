@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -44,13 +44,11 @@ def distributed_rank(
     df: DataFrame,
     keys: Sequence[str],
     order_col: str,
-    descending: bool = True,
 ) -> DataFrame:
     """Attach ``rnk``, ``dense_rnk``, ``pct_rank`` for ``order_col``
-    within each key — equal to the SQL window functions, computed
-    without sorting the full data per key."""
-    oc = F.col(order_col)
-    direction: Column = oc.desc_nulls_last() if descending else oc.asc_nulls_last()
+    (descending, NULLs last) within each key — equal to the SQL window
+    functions, computed without sorting the full data per key."""
+    direction = F.col(order_col).desc_nulls_last()
     counts = df.groupBy(*keys, order_col).agg(F.count("*").alias("__c"))
     w = Window.partitionBy(*keys).orderBy(direction)
     prior = (

@@ -53,35 +53,29 @@ def table_diff(
     left: DataFrame,
     right: DataFrame,
     key_cols: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Keyed diff → ``(*key_cols, status)`` with status one of
     ``added | removed | changed | unchanged | duplicate_key |
     null_key``.
 
-    ``compare_cols`` defaults to every shared non-key column (in
-    LEFT's column order, the fixed hash order).  Key sets must exist
-    on both sides; a side-specific payload column must be named
-    explicitly or it silently escapes comparison — so the default
-    raises if the two sides' non-key columns differ.
+    Every non-key column is compared (in LEFT's column order, the
+    fixed hash order).  Key sets must exist on both sides; a
+    side-specific payload column would silently escape comparison, so
+    the diff raises if the two sides' non-key columns differ.
     """
     key_cols = list(key_cols)
     if not key_cols:
         raise ValueError("key_cols must name at least one column")
-    if compare_cols is None:
-        lc = [c for c in left.columns if c not in key_cols]
-        rc = [c for c in right.columns if c not in key_cols]
-        if set(lc) != set(rc):
-            raise ValueError(
-                f"sides disagree on payload columns (left-only "
-                f"{sorted(set(lc) - set(rc))}, right-only "
-                f"{sorted(set(rc) - set(lc))}): pass compare_cols "
-                "explicitly"
-            )
-        compare_cols = lc
-    compare_cols = list(compare_cols)
+    compare_cols = [c for c in left.columns if c not in key_cols]
+    rc = [c for c in right.columns if c not in key_cols]
+    if set(compare_cols) != set(rc):
+        raise ValueError(
+            f"sides disagree on payload columns (left-only "
+            f"{sorted(set(compare_cols) - set(rc))}, right-only "
+            f"{sorted(set(rc) - set(compare_cols))})"
+        )
     if not compare_cols:
-        raise ValueError("compare_cols must name at least one column")
+        raise ValueError("no payload column to compare")
 
     def _classify(df: DataFrame, side: str) -> DataFrame:
         # one partial aggregate per side: (key) → (n occurrences, one

@@ -141,9 +141,10 @@ def duplicate_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFr
     return df.groupBy(*cols).count().filter(F.col("count") > 1)
 
 
-def drop_nulls(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """F2 — ``na.drop`` (reference scripts/etl.py:58)."""
-    return df.na.drop(subset=list(subset) if subset else None)
+def drop_nulls(df: DataFrame) -> DataFrame:
+    """F2 — ``na.drop``: rows with a NULL in any column go (reference
+    scripts/etl.py:58)."""
+    return df.na.drop()
 
 
 def top_k(

@@ -71,28 +71,18 @@ def salted_join(
     left: DataFrame,
     right: DataFrame,
     on: str | Sequence[str],
-    buckets: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join where ``left`` is large with skewed ``on`` keys and
-    ``right`` is small but above the broadcast threshold.  Joins on
-    ``(on..., salt)`` so the hot key's rows land in ``buckets``
-    different shuffle partitions instead of one straggler task.
+    """Inner equi-join where ``left`` is large with skewed ``on`` keys
+    and ``right`` is small but above the broadcast threshold.  Joins
+    on ``(on..., salt)`` so the hot key's rows land in 8 different
+    shuffle partitions instead of one straggler task.
 
-    Only left-preserving joins are accepted: the salting is
-    transparent for inner/left/left_semi/left_anti (every left row
+    The salting is transparent for an inner join (every left row
     carries exactly one salt; the replicated right side only ever
-    matches or vanishes).  A right/full join would surface the
-    ``buckets``× replicated right rows as spurious null-left output —
-    rejected loudly rather than silently wrong."""
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
-               "leftsemi", "semi", "left_anti", "leftanti", "anti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join supports left-preserving joins only, got how={how!r}"
-            " (a right/full join would emit the salt-replicated right rows)"
-        )
+    matches or vanishes).  A right/full join would surface the 8×
+    replicated right rows as spurious null-left output, so none is
+    offered."""
     keys = cols_list(on)
-    salted_left = with_salt(left, buckets)
-    salted_right = replicate_for_salt(right, buckets)
-    return salted_left.join(salted_right, on=keys + [SALT_COL], how=how).drop(SALT_COL)
+    salted_left = with_salt(left, 8)
+    salted_right = replicate_for_salt(right, 8)
+    return salted_left.join(salted_right, on=keys + [SALT_COL]).drop(SALT_COL)

@@ -341,8 +341,8 @@ def pct_share_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ntile_distributed(rel: DataFrame, order_cols, key: str, out_name: str) -> DataFrame:
-    """Exact ``ntile(5)`` over a GLOBAL unique ordering without the
+def _ntile_distributed(rel: DataFrame, order_cols, out_name: str) -> DataFrame:
+    """Exact ``ntile(5)`` of each ``o_custkey`` over a GLOBAL unique ordering without the
     global single-task window sort (the r11 lint finding on the r9
     RFM shape): range-repartition on the ordering, per-range-partition
     ``row_number``, level-2 exclusive offsets over the ≤
@@ -399,7 +399,7 @@ def _ntile_distributed(rel: DataFrame, order_cols, key: str, out_name: str) -> D
         loc.join(F.broadcast(off), on="__pid")
         .crossJoin(F.broadcast(tot))  # 1-row total relation
         .select(
-            F.col(key).alias(f"__k_{out_name}"),
+            F.col("o_custkey").alias(f"__k_{out_name}"),
             bucket.cast("int").alias(out_name),
         )
     )
@@ -435,19 +435,16 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ntile_distributed(
             per_cust,
             [F.desc("last_order"), F.asc("o_custkey")],
-            "o_custkey",
             "r_score",
         ),
         _ntile_distributed(
             per_cust,
             [F.desc("frequency"), F.asc("o_custkey")],
-            "o_custkey",
             "f_score",
         ),
         _ntile_distributed(
             per_cust,
             [F.desc("monetary"), F.asc("o_custkey")],
-            "o_custkey",
             "m_score",
         ),
     ]

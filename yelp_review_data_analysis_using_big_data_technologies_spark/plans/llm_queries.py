@@ -113,7 +113,7 @@ def doc_unicode_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.normalize import normalize_text
 
     docs = load_table(spark, sf_dir, "documents")
-    normed = normalize_text(docs, form="NFC", flag_col="changed")
+    normed = normalize_text(docs, flag_col="changed")
     return normed.select(
         "doc_id", F.sha2(F.col("text"), 256).alias("nfc_hash"), "changed"
     )
@@ -428,7 +428,7 @@ def doc_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum, so the hash check proves the scalable decomposition
     computes the textbook integers."""
     docs = load_table(spark, sf_dir, "documents")
-    return lpk.pack_bins(docs, budget=512).orderBy("doc_id")
+    return lpk.pack_bins(docs).orderBy("doc_id")
 
 
 def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -698,9 +698,7 @@ def _freeze_manifest(
     # curation) via the SAME membership machinery.
     if balance == "cluster":
         sampled = (
-            lsmp.cluster_balance_sample(
-                good, _load_embeddings(spark, sf_dir), n_cells=8
-            )
+            lsmp.cluster_balance_sample(good, _load_embeddings(spark, sf_dir))
             .drop("cluster_id")
             .localCheckpoint(eager=True)
         )
@@ -719,7 +717,7 @@ def _freeze_manifest(
     # 7: pack in POSITION order (positions are dense, so the
     # two-level prefix-sum bucketing stays balanced by construction)
     packed = lpk.pack_bins(
-        manifest, budget=512, id_col="position", tokens_col="n_tokens"
+        manifest, id_col="position", tokens_col="n_tokens"
     ).drop("n_tokens")
     return manifest.join(packed, on="position").select(
         "doc_id",
@@ -1060,9 +1058,7 @@ def vocab_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is exactly what a word-level BPE tokenizer persists.  Twin:
     the K rounds unrolled as CTE blocks with the tie order pinned
     (count DESC, pair lexicographic)."""
-    return lbpe.bpe_merge_steps(
-        load_table(spark, sf_dir, "documents"), k=6
-    )
+    return lbpe.bpe_merge_steps(load_table(spark, sf_dir, "documents"))
 
 
 def corpus_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1084,9 +1080,7 @@ def corpus_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ltx.token_count("text").cast("bigint").alias("n_tokens"),
     )
     return (
-        lsmp.cluster_balance_sample(
-            good, _load_embeddings(spark, sf_dir), n_cells=8
-        )
+        lsmp.cluster_balance_sample(good, _load_embeddings(spark, sf_dir))
         .select("doc_id", "lang", "n_tokens", "cluster_id")
         .orderBy("doc_id")
     )
@@ -1113,9 +1107,7 @@ def vocab_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoding effect (tokens before vs symbols after, compression
     ratio) — the tokenizer-validation half of the train/apply pair.
     Twin: the same unrolled round blocks aggregated per doc."""
-    return lbpe.bpe_encode_stats(
-        load_table(spark, sf_dir, "documents"), k=6
-    )
+    return lbpe.bpe_encode_stats(load_table(spark, sf_dir, "documents"))
 
 
 def corpus_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1217,15 +1209,13 @@ def pipeline_split_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (keyword extraction)."""
-    return ltm.tf_idf_top_terms(load_table(spark, sf_dir, "documents"), k=3)
+    return ltm.tf_idf_top_terms(load_table(spark, sf_dir, "documents"))
 
 
 def doc_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-stride token windows (64 tokens every 48) with content
     hashes — the context-window packing step."""
-    return ltm.token_chunks(
-        load_table(spark, sf_dir, "documents"), chunk=64, stride=48
-    )
+    return ltm.token_chunks(load_table(spark, sf_dir, "documents"))
 
 
 def doc_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1246,7 +1236,7 @@ def doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed k-gram relaxation of exact-substring training-data
     dedup (Lee et al. 2022).  Occurrence semantics: within-document
     repeats flag both copies."""
-    return lsp.dup_spans(load_table(spark, sf_dir, "documents"), k=5)
+    return lsp.dup_spans(load_table(spark, sf_dir, "documents"))
 
 
 def doc_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1254,7 +1244,7 @@ def doc_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     k=5-gram spans, keep-first occurrence exempt (one copy of repeated
     content survives, the CCNet line-dedup rule).  Fully-excised docs
     yield NULL clean_text (the empty-array portability contract)."""
-    return lsp.remove_dup_spans(load_table(spark, sf_dir, "documents"), k=5)
+    return lsp.remove_dup_spans(load_table(spark, sf_dir, "documents"))
 
 
 def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1336,7 +1326,7 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses the token explode before any aggregate; df and corpus
     stats ride tiny broadcasts."""
     docs = load_table(spark, sf_dir, "documents")
-    return ltm.bm25_topk(docs, _BM25_QUERY, k=10)
+    return ltm.bm25_topk(docs, _BM25_QUERY)
 
 
 def doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1346,7 +1336,7 @@ def doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partial agg and the cut a distributed TakeOrderedAndProject,
     so the rank windows see ≤ 50 rows."""
     docs = load_table(spark, sf_dir, "documents")
-    return ltm.vocab_coverage(docs, v=50)
+    return ltm.vocab_coverage(docs)
 
 
 _PRF_FEEDBACK_K = 5
@@ -1376,7 +1366,6 @@ def doc_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ltm.bm25_prf_topk(
         docs,
         _BM25_QUERY,
-        k=10,
         feedback_k=_PRF_FEEDBACK_K,
         expand_m=_PRF_EXPAND_M,
     )
@@ -1702,7 +1691,6 @@ def vec_filtered_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         where=_FILTERED_ANN_PRED,
         k=_TOP_K,
         n_probe=_IVF_PROBE,
-        rerank=4,
         params=params,
     ).orderBy("query_id", "rk")
 
@@ -1901,7 +1889,6 @@ def vec_top_k_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_TOP_K,
         n_cells=_IVF_CELLS,
         n_probe=_IVF_PROBE,
-        rerank=4,
     ).orderBy("query_id", "rk")
 
 
@@ -1927,7 +1914,6 @@ def vec_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         _query_set(emb),
         k=_TOP_K,
         n_probe=_IVF_PROBE,
-        rerank=4,
         params=params,
     ).orderBy("query_id", "rk")
 
@@ -2004,7 +1990,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column feature extraction via Arrow-batched mapInPandas
     (deterministic fake decode — see llm.multimodal)."""
     docs = load_table(spark, sf_dir, "documents")
-    return lmm.extract_features(lmm.documents_as_media(docs), decode="fake")
+    return lmm.extract_features(lmm.documents_as_media(docs))
 
 
 def multimodal_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2028,7 +2014,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash covers the full sampling rule."""
     docs = load_table(spark, sf_dir, "documents")
     media = lmm.documents_as_media(docs)
-    return lmm.sample_frames(media, n_samples=4).orderBy(
+    return lmm.sample_frames(media).orderBy(
         "media_id", "sample_idx"
     )
 
@@ -2058,7 +2044,7 @@ def vec_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`llm.vectors.quantize_pq` and get the raw ``array<int>``."""
     emb = _load_embeddings(spark, sf_dir)
     return (
-        lvec.quantize_pq(emb, m=4, k=16)
+        lvec.quantize_pq(emb)
         .withColumn(
             "pq_codes", F.concat_ws(",", F.col("pq_codes").cast("array<string>"))
         )
@@ -2106,9 +2092,7 @@ def doc_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.expr(_CORPUS_PRED))
     bench = docs.filter(F.expr(_BENCH_PRED))
-    return ldec.contamination_overlap(
-        corpus, bench, min_shared=2
-    ).orderBy("doc_id")
+    return ldec.contamination_overlap(corpus, bench).orderBy("doc_id")
 
 
 def doc_repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2217,32 +2201,28 @@ _IVF_TOP_K_SQL = _IVF_TOP_K_TEMPLATE.format(
 )
 
 
-def _ivf_filtered_sql(n_probe: int, qpred: str) -> str:
-    """DuckDB twin of llm.vectors.search_ivf_index_filtered: same
-    seeded centroids and cell assignment as the IVF twin, the corpus
-    pre-filtered by ``_FILTERED_ANN_PRED``, and each query's effective
-    probe count derived from the SAME widening ladder — the first rung
-    whose top-p cells hold ≥ ``_TOP_K`` filtered vectors, else the final
+def _ivf_filtered_sql() -> str:
+    """DuckDB twin of llm.vectors.search_ivf_index_filtered at the
+    entry's dials (``_IVF_PROBE`` of ``_IVF_CELLS``, the first
+    ``_N_QUERIES`` vectors as queries): same seeded centroids and cell
+    assignment as the IVF twin, the corpus pre-filtered by
+    ``_FILTERED_ANN_PRED``, and each query's effective probe count
+    derived from the SAME widening ladder — the first rung whose top-p
+    cells hold ≥ ``_TOP_K`` filtered vectors, else the final
     probe-everything rung (expressed as a first-match CASE over
     cumulative per-cell-rank counts)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import probe_ladder
 
-    ladder = probe_ladder(n_probe, _IVF_CELLS)
-    if len(ladder) == 1:
-        # n_probe >= n_cells: one probe-everything rung.  A CASE with
-        # zero WHEN clauses (`CASE ELSE n END`) is a syntax error, so
-        # emit the literal.
-        eff_case = str(ladder[-1])
-    else:
-        eff_case = (
-            "CASE "
-            + " ".join(
-                f"WHEN sum(CASE WHEN crk <= {p} THEN cnt ELSE 0 END) "
-                f">= {_TOP_K} THEN {p}"
-                for p in ladder[:-1]
-            )
-            + f" ELSE {ladder[-1]} END"
+    ladder = probe_ladder(_IVF_PROBE, _IVF_CELLS)
+    eff_case = (
+        "CASE "
+        + " ".join(
+            f"WHEN sum(CASE WHEN crk <= {p} THEN cnt ELSE 0 END) "
+            f">= {_TOP_K} THEN {p}"
+            for p in ladder[:-1]
         )
+        + f" ELSE {ladder[-1]} END"
+    )
     return f"""
 WITH cents AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell_id,
@@ -2261,7 +2241,7 @@ WITH cents AS (
   SELECT * FROM assigned WHERE {_FILTERED_ANN_PRED}
 ), q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE {qpred} AND {VEC_OK_SQL}
+  FROM embeddings WHERE vec_id < {_N_QUERIES} AND {VEC_OK_SQL}
 ), qcells AS (
   SELECT q.query_id, q.qv, cents.cell_id,
          row_number() OVER (PARTITION BY q.query_id
@@ -2487,8 +2467,8 @@ def _freeze_audit_sql() -> str:
 
 ORACLES = {
     "doc_tfidf_cosine_pairs": ltm.tfidf_cosine_pairs_sql(),
-    "doc_dup_spans": lsp.dup_spans_sql(k=5),
-    "doc_dup_span_removal": lsp.remove_dup_spans_sql(k=5),
+    "doc_dup_spans": lsp.dup_spans_sql(),
+    "doc_dup_span_removal": lsp.remove_dup_spans_sql(),
     "doc_winnow_fingerprints": lwin.winnow_fingerprints_sql(),
     "doc_winnow_pairs": lwin.winnow_pairs_sql(),
     "doc_exact_dedup": (
@@ -2770,7 +2750,7 @@ ORDER BY s.split
         + ") GROUP BY 2 ORDER BY op, grp"
     ),
     "doc_tfidf_top_terms": ltm.tf_idf_top_terms_sql(),
-    "doc_token_chunks": ltm.token_chunks_sql(chunk=64, stride=48),
+    "doc_token_chunks": ltm.token_chunks_sql(),
     "doc_lm_quality": ltm.bigram_lm_nll_sql(),
     "doc_gopher_rules": lq.gopher_rules_sql(),
     "doc_importance_weights": ltm.importance_weights_sql(),
@@ -2895,9 +2875,7 @@ ORDER BY emb.vec_id
     ),
     # filtered-ANN twin: the widening ladder is part of the semantics,
     # derived from the SAME probe_ladder rungs as the engine
-    "vec_filtered_ann": _ivf_filtered_sql(
-        n_probe=_IVF_PROBE, qpred=f"vec_id < {_N_QUERIES}"
-    ),
+    "vec_filtered_ann": _ivf_filtered_sql(),
     # the persisted-index search shares seeds/dials with the in-memory
     # operator, so the same twin proves the round-trip lossless
     "vec_ivf_index_search": _IVF_TOP_K_SQL,
@@ -2911,12 +2889,12 @@ ORDER BY emb.vec_id
     # coalesce(strlen,0): the Spark fake decode treats a NULL payload
     # as b"" — the twin must score a NULL text identically
     "multimodal_integrity_audit": lmm.mixed_media_audit_sql(),
-    "doc_bm25_topk": ltm.bm25_topk_sql(_BM25_QUERY, k=10),
+    "doc_bm25_topk": ltm.bm25_topk_sql(_BM25_QUERY),
     "doc_prf_expansion": ltm.prf_expansion_terms_sql(
         _BM25_QUERY, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M
     ),
     "doc_bm25_prf_topk": ltm.bm25_prf_topk_sql(
-        _BM25_QUERY, k=10, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M
+        _BM25_QUERY, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M
     ),
     "vec_mmr_rerank": lvec.mmr_rerank_sql(
         k=_MMR_K, pool=_MMR_POOL, lam=_MMR_LAMBDA, n_queries=_N_QUERIES

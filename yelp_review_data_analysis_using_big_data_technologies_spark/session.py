@@ -30,7 +30,6 @@ def _default_driver_memory() -> str:
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
@@ -38,30 +37,28 @@ def get_spark(
     On a real cluster ``master`` comes from spark-submit; locally we
     default to ``local[$SPARK_GRAFT_CPUS]`` (all cores).  Shuffle
     partitions default to the parallelism of the master — at 100 TB
-    the caller overrides via ``shuffle_partitions`` or lets AQE
-    coalesce from a high initial number.  ``extra_conf`` entries are
-    applied last (``sources.catalog`` documents the Hive-catalog one).
+    the caller overrides ``spark.sql.shuffle.partitions`` through
+    ``extra_conf`` or lets AQE coalesce from a high initial number.
+    ``extra_conf`` entries are applied last (``sources.catalog``
+    documents the Hive-catalog one).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # honor the docstring: parallelism comes from the RESOLVED
-        # master (an explicit local[N] wins over the env default), and
-        # a malformed count fails with the reason, not a bare
-        # ValueError from int()
-        m = re.fullmatch(r"local\[(\*|\d+)(?:,\d+)?\]", master)
-        if m:
-            width = m.group(1)
-            shuffle_partitions = 32 if width == "*" else max(int(width), 1)
-        elif master.startswith("local["):
-            raise ValueError(
-                f"cannot derive shuffle partitions from master={master!r} "
-                "(set shuffle_partitions, or SPARK_GRAFT_CPUS to an "
-                "integer or '*')"
-            )
-        else:
-            # cluster masters: a sane initial width; AQE coalesces
-            shuffle_partitions = 32
+    # parallelism comes from the RESOLVED master (an explicit local[N]
+    # wins over the env default), and a malformed count fails with the
+    # reason, not a bare ValueError from int()
+    m = re.fullmatch(r"local\[(\*|\d+)(?:,\d+)?\]", master)
+    if m:
+        width = m.group(1)
+        shuffle_partitions = 32 if width == "*" else max(int(width), 1)
+    elif master.startswith("local["):
+        raise ValueError(
+            f"cannot derive shuffle partitions from master={master!r} "
+            "(set SPARK_GRAFT_CPUS to an integer or '*')"
+        )
+    else:
+        # cluster masters: a sane initial width; AQE coalesces
+        shuffle_partitions = 32
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -32,11 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-#: Formats accepted by :func:`register_external_table` — ``fmt`` is
-#: interpolated into DDL, so it is allowlisted, not escaped.
-EXTERNAL_TABLE_FORMATS = frozenset({"PARQUET", "CSV", "JSON", "ORC"})
-
-
 def _q(name: str) -> str:
     """Backtick-quote one identifier part."""
     return "`" + name.replace("`", "``") + "`"
@@ -91,18 +86,12 @@ def register_external_table(
     table: str,
     path: str,
     database: str | None = None,
-    fmt: str = "PARQUET",
 ) -> None:
-    """Register already-written files as a catalog table — the crawler
-    role without the crawl: schema comes from the parquet footers at
-    query time, partition discovery from the directory layout.  Pure
-    metadata; DROP TABLE leaves the files.  ``fmt`` is allowlisted and
-    ``path`` quote-escaped — both land inside a DDL string."""
-    fmt_upper = fmt.upper()
-    if fmt_upper not in EXTERNAL_TABLE_FORMATS:
-        raise ValueError(
-            f"fmt must be one of {sorted(EXTERNAL_TABLE_FORMATS)}, got {fmt!r}"
-        )
+    """Register already-written parquet files as a catalog table — the
+    crawler role without the crawl: schema comes from the parquet
+    footers at query time, partition discovery from the directory
+    layout.  Pure metadata; DROP TABLE leaves the files.  ``path`` is
+    quote-escaped — it lands inside a DDL string."""
     name = _qualified(database, table)
     # Name-collision guard (r8 catalog-collision probe): a TEMP VIEW
     # with this unqualified name shadows any table we register (every
@@ -155,7 +144,7 @@ def register_external_table(
         if current is not None and _canon_location(current) != _canon_location(path):
             spark.sql(f"DROP TABLE {name}")
     spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {name} USING {fmt_upper} "
+        f"CREATE TABLE IF NOT EXISTS {name} USING PARQUET "
         f"LOCATION {_q_str(path)}"
     )
     # partitioned layouts need an explicit partition sweep once
@@ -175,11 +164,11 @@ def save_managed_table(
     df: DataFrame,
     table: str,
     database: str | None = None,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
 ) -> None:
-    """Engine-owned table: data written into the warehouse dir +
-    catalog metadata in one step.  Partitioned managed tables get
+    """Engine-owned table, written in overwrite mode: data written
+    into the warehouse dir + catalog metadata in one step.
+    Partitioned managed tables get
     partition pruning on catalog lookups, and ANALYZE (below) feeds
     CBO row counts.
 
@@ -187,24 +176,19 @@ def save_managed_table(
     metadata dies with the session but the warehouse directory
     persists, so the next session's first ``saveAsTable`` hits
     LOCATION_ALREADY_EXISTS for a table the catalog has never heard
-    of.  With ``mode="overwrite"`` (the caller already declared the
-    data replaceable) and the table ABSENT from the catalog, the
-    orphaned directory is engine-owned leftovers — delete it and
-    retry once.  Any other conflict (table registered, non-overwrite
-    mode) propagates untouched."""
+    of.  Overwrite already declares the data replaceable, so with the
+    table ABSENT from the catalog the orphaned directory is
+    engine-owned leftovers — delete it and retry once.  Any other
+    conflict (table registered) propagates untouched."""
     name = _qualified(database, table)
-    writer = df.write.mode(mode).format("parquet")
+    writer = df.write.mode("overwrite").format("parquet")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     try:
         writer.saveAsTable(name)
     except Exception as exc:
         spark = df.sparkSession
-        if (
-            mode != "overwrite"
-            or "LOCATION_ALREADY_EXISTS" not in str(exc)
-            or spark.catalog.tableExists(name)
-        ):
+        if "LOCATION_ALREADY_EXISTS" not in str(exc) or spark.catalog.tableExists(name):
             raise
         # location is only quoted in the error text; re-derive it from
         # the database's registered locationUri (which honors custom

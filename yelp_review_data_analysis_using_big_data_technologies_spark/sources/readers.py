@@ -118,28 +118,13 @@ def read_json(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = None,
-    mode: str = "PERMISSIVE",
-    corrupt_col: str | None = None,
 ) -> DataFrame:
     """JSON-lines scan (S1).  Explicit schema strongly preferred: at
     100 TB, inference is a second full scan (reference does this at
-    scripts/etl.py:21-23).
-
-    Corrupt-record policy matters at ingest scale — one bad line in a
-    billion must not kill the job, but silently nulling it loses data:
-    - ``mode="PERMISSIVE"`` (default) + ``corrupt_col`` quarantines
-      unparseable lines into that column for a later audit query;
-    - ``mode="DROPMALFORMED"`` discards them;
-    - ``mode="FAILFAST"`` aborts on the first bad line (CI/backfill
-      validation runs).
+    scripts/etl.py:21-23).  Spark's PERMISSIVE mode applies: one bad
+    line in a billion does not kill the job; it reads as a NULL row.
     """
-    reader = spark.read.option("mode", mode)
-    if corrupt_col is not None:
-        if schema is not None and corrupt_col not in schema.fieldNames():
-            schema = T.StructType(
-                [*schema.fields, T.StructField(corrupt_col, T.StringType())]
-            )
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+    reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)

@@ -2,8 +2,7 @@
 
 The reference coalesces to 1 partition for its final CSV/Parquet
 writes (glue_job.py:88, scripts/etl.py:176) — a single-task write that
-cannot scale.  Our writers default to partitioned multi-file output;
-``coalesce`` is an explicit small-export option only.
+cannot scale.  Our writers write partitioned multi-file output.
 """
 
 from __future__ import annotations
@@ -25,10 +24,39 @@ def hadoop_path_exists(spark, path: str) -> bool:
     or ``s3a://`` table would re-initialize (and discard) the remote
     state on every call — the probe must resolve the path's OWN
     filesystem from the Hadoop configuration."""
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, p = _hadoop_fs(spark, path)
     return bool(fs.exists(p))
+
+
+def _hadoop_fs(spark, path: str):
+    """``(FileSystem, Path)`` of ``path`` under its own scheme."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def hadoop_table_exists(spark, path: str) -> bool:
+    """Whether ``path`` holds a table yet: a data file somewhere under
+    it, through the path's own Hadoop FileSystem (the
+    :func:`hadoop_path_exists` rationale).  Files and directories named
+    ``_*`` or ``.*`` are not data — the names Spark's file index skips —
+    so a missing path, an empty directory and a ``_SUCCESS``-only
+    directory all read as "no table".  The recursive listing stops at
+    the first data file.
+
+    The probe never reads the table: a table that exists but cannot be
+    read (a corrupt footer, a permission failure) makes the caller's
+    own read raise, instead of passing for "missing" and letting a
+    sink bootstrap over it — a failed read is no presence test."""
+    fs, p = _hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return False
+    root = len(fs.makeQualified(p).toUri().getPath().rstrip("/"))
+    files = fs.listFiles(p, True)
+    while files.hasNext():
+        rel = files.next().getPath().toUri().getPath()[root:]
+        if not any(part.startswith(("_", ".")) for part in rel.split("/") if part):
+            return True
+    return False
 
 
 def delete_partition_dirs(
@@ -74,14 +102,11 @@ def write_parquet(
     path: str,
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
-    coalesce: int | None = None,
 ) -> None:
-    """Parquet sink (S3).  At scale: pass ``partition_by`` (e.g.
-    ["year", "month"]) so downstream reads get partition pruning;
-    never ``coalesce`` below the cluster's write parallelism."""
+    """Parquet sink (S3), one file per partition.  At scale: pass
+    ``partition_by`` (e.g. ["year", "month"]) so downstream reads get
+    partition pruning."""
     _validate_path(path)
-    if coalesce is not None:
-        df = df.coalesce(coalesce)
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -449,10 +474,10 @@ def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -
     writer.orc(path)
 
 
-def write_csv(df: DataFrame, path: str, coalesce: int | None = None) -> None:
-    """CSV sink with header (S4; reference glue_job.py:88-92).
-    ``coalesce=1`` reproduces the reference's single-file export but is
-    opt-in — the default writes one file per partition.
+def write_csv(df: DataFrame, path: str) -> None:
+    """CSV sink with header (S4; reference glue_job.py:88-92), one file
+    per partition (the reference's single-file export is a
+    ``coalesce(1)`` the caller can apply first).
 
     Losslessness (r8 quoting probe): Spark's CSV writer TRIMS leading/
     trailing whitespace by default (``ignoreLeadingWhiteSpace`` /
@@ -462,8 +487,6 @@ def write_csv(df: DataFrame, path: str, coalesce: int | None = None) -> None:
     ``multiLine`` (see its docstring for the split-parallelism
     trade-off)."""
     _validate_path(path)
-    if coalesce is not None:
-        df = df.coalesce(coalesce)
     (
         df.write.mode("overwrite")
         .option("header", True)

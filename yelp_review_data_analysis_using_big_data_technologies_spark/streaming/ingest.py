@@ -58,8 +58,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors imp
     build_ivfpq_index,
     read_index_params,
 )
-from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import hadoop_path_exists
-from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import _is_missing_table
+from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import hadoop_path_exists, hadoop_table_exists
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
 
 
@@ -68,8 +67,9 @@ def read_before(
 ) -> DataFrame | None:
     """Accumulated state at ``path`` visible to micro-batch
     ``batch_id``: partitions of strictly EARLIER batches only, or
-    ``None`` while no table exists yet (:func:`streaming.joins
-    ._is_missing_table`; an existing-but-unreadable table raises).
+    ``None`` while no table exists yet
+    (:func:`sources.writers.hadoop_table_exists`; an
+    existing-but-unreadable table raises).
 
     A crash between a batch's partition write and its checkpoint
     commit leaves that batch's own partition on disk; a replay that
@@ -79,14 +79,9 @@ def read_before(
     the state the original attempt saw (partition pruning keeps the
     filter a directory-level skip, no data read).  ``batch_col`` stays
     in the result; callers that do not need it drop it."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as exc:
-        if not _is_missing_table(exc):
-            raise
+    if not hadoop_table_exists(spark, path):
         return None
+    df = spark.read.parquet(path)
     if batch_col in df.columns:
         df = df.filter(F.col(batch_col) < F.lit(batch_id))
     return df
@@ -104,7 +99,7 @@ def _delta_features(delta: DataFrame) -> DataFrame:
     no-quadratic-NULL-collision guarantee)."""
     src = spread(delta.select(F.col("doc_id"), F.col("text")))
     base = (
-        shingled(src, ["doc_id"], "text", SHINGLE_N, out="__sh0")
+        shingled(src, ["doc_id"], n=SHINGLE_N, out="__sh0")
         .select(
             F.col("doc_id"),
             F.array_distinct(F.col("__sh0")).alias("__sh"),
@@ -162,11 +157,11 @@ def stream_dedup_ingest_to_parquet(
        Jaccard ≥ ``THRESHOLD``) duplicates of the already-admitted
        corpus (:func:`llm.dedup.dedup_against_corpus`).
 
-    The first batch bootstraps the table.  The bootstrap probe goes
-    through the READER (``AnalysisException`` + missing-path check,
-    :func:`streaming.joins._is_missing_table`) so unreadable-but-
-    present tables fail loudly instead of silently restarting the
-    corpus from one batch.
+    The first batch bootstraps the table.  The bootstrap probe
+    (:func:`sources.writers.hadoop_table_exists`) looks for data files,
+    never reads them, so an unreadable-but-present table fails loudly
+    in the read instead of silently restarting the corpus from one
+    batch.
 
     Every batch re-shingles and re-MinHashes the accumulated corpus,
     so per-batch cost grows linearly with corpus size."""
@@ -581,7 +576,6 @@ def stream_pq_index_ingest(
     index_path: str,
     checkpoint: str,
     n_cells: int = 8,
-    k_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> IndexParams | None:
@@ -615,5 +609,5 @@ def stream_pq_index_ingest(
     mean "built"."""
     return _index_ingest(
         stream, index_path, checkpoint, "codebooks", build_ivfpq_index,
-        add_to_ivfpq_index, id_col, vec_col, n_cells=n_cells, k_codes=k_codes,
+        add_to_ivfpq_index, id_col, vec_col, n_cells=n_cells,
     )

@@ -78,21 +78,6 @@ def stream_static_enrich(
     return stream.join(F.broadcast(dim), on=on, how="inner")
 
 
-def _is_missing_table(exc) -> bool:
-    """True iff an ``AnalysisException`` from a read probe means "no
-    table here yet" (bootstrap), as opposed to a table that EXISTS but
-    cannot be read (schema corruption, permission failure, a crash
-    mid-overwrite).  Conflating the two would let a merge sink silently
-    reinitialize an accumulated view from one micro-batch — so any
-    other failure propagates loudly instead of bootstrapping."""
-    get_cls = getattr(exc, "getErrorClass", None)
-    cls = (get_cls() if callable(get_cls) else None) or ""
-    missing = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-    if cls:
-        return cls in missing
-    return any(m in str(exc) for m in missing)
-
-
 def stream_merge_to_parquet(
     result: DataFrame,
     path: str,
@@ -117,14 +102,14 @@ def stream_merge_to_parquet(
     bootstrap batch is collapsed through the same window so the table
     is key-unique from birth).
 
-    Bootstrap-vs-merge is decided by probing the table THROUGH the
-    reader (catching ``AnalysisException``), not ``os.path.exists`` —
-    a local-FS-only check would see nothing on HDFS/S3 and silently
-    overwrite the table every micro-batch; the reader probe follows
-    whatever filesystem the path's scheme names."""
-    from pyspark.errors import AnalysisException
-
+    Bootstrap-vs-merge is decided by
+    :func:`sources.writers.hadoop_table_exists`, which asks the path's
+    own filesystem for a data file — not ``os.path.exists``, which
+    would see nothing on HDFS/S3 and silently overwrite the table every
+    micro-batch.  A table that exists but cannot be read fails the
+    merge's read instead of bootstrapping over the accumulated view."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+        hadoop_table_exists,
         latest_version_rows,
         upsert_by_key,
         write_parquet,
@@ -132,19 +117,7 @@ def stream_merge_to_parquet(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            # cheap metadata-only probe: resolves footers, reads no rows
-            spark.read.parquet(path).schema
-            exists = True
-        except AnalysisException as exc:
-            # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA (empty dir):
-            # either way there is no table yet.  Anything else (the
-            # table exists but is unreadable) must NOT bootstrap — it
-            # would replace the accumulated view with this batch alone.
-            if not _is_missing_table(exc):
-                raise
-            exists = False
-        if not exists:
+        if not hadoop_table_exists(spark, path):
             first = (
                 batch_df
                 if version_col is None
@@ -202,13 +175,14 @@ def stream_increment_counts_to_parquet(
     touched partitions committed and others not — a replayed batch
     re-merges exactly the partitions whose watermark has not reached
     it and leaves committed ones untouched (unpartitioned views use
-    the single global watermark; one directory, one commit).  A read probe that fails
-    for any reason OTHER than path-missing raises instead of
-    bootstrapping — see :func:`_is_missing_table`."""
-    from pyspark.errors import AnalysisException
+    the single global watermark; one directory, one commit).  The view
+    bootstraps only where no data file exists
+    (:func:`sources.writers.hadoop_table_exists`); an existing view
+    that cannot be read raises instead of being reinitialized."""
     from pyspark.sql import functions as F
 
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import (
+        hadoop_table_exists,
         overwrite_partitions_dynamic,
         partition_prune_predicate,
         write_parquet,
@@ -268,13 +242,10 @@ def stream_increment_counts_to_parquet(
         partial = _agg(batch_df).withColumn(
             "__max_batch_id", F.lit(batch_id).cast("long")
         )
-        try:
-            current = _read_current(spark, partial)
-        except AnalysisException as exc:
-            if not _is_missing_table(exc):
-                raise  # existing-but-unreadable view: never reinit
+        if not hadoop_table_exists(spark, path):
             write_parquet(partial, path, partition_by=partition_by)
             return
+        current = _read_current(spark, partial)
         if partition_by:
             if not partial.head(1):
                 return  # empty batch: zero partitions to touch

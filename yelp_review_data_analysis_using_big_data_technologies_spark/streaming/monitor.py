@@ -169,7 +169,7 @@ def stream_ks_monitor(
             lambda batch: ks_2sample(ref_counts, batch),
         )
     finally:
-        release_staging(blocking=True, tag=ref_tag)
+        release_staging(tag=ref_tag)
 
 
 def stream_ks_monitor_sql(ref_sql: str, batch_sqls: list[str]) -> str:

@@ -81,33 +81,25 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def tumbling_counts(events: DataFrame, watermark: str | None = None) -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Tumbling 1-hour-window event counts + value sums per event type.
 
-    Works identically on a batch or streaming ``events`` frame.  Pass
-    ``watermark`` (e.g. ``"30 minutes"``) on streams that must bound
-    state / emit in append mode; leave ``None`` for complete-mode or
-    batch execution.
+    Works identically on a batch or streaming ``events`` frame (a
+    stream runs in complete mode: no watermark bounds its state).
     """
     # A tumbling window IS a sliding window whose slide equals its
     # width (F.window(ts, w) == F.window(ts, w, w)) — one shared body.
-    return sliding_counts(events, slide="1 hour", watermark=watermark)
+    return sliding_counts(events, slide="1 hour")
 
 
-def sliding_counts(
-    events: DataFrame,
-    slide: str = "30 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
+def sliding_counts(events: DataFrame, slide: str = "30 minutes") -> DataFrame:
     """Sliding 1-hour-window event counts + value sums per event type:
     each event contributes to ``1 hour / slide`` overlapping windows (Spark
     materializes the replication inside the WindowExec, not as an
     explode).  Same batch/streaming duality as :func:`tumbling_counts`;
-    state keys grow by the overlap factor, so watermarking matters
-    more here than for tumbling windows."""
-    src = events.withWatermark("ts", watermark) if watermark else events
+    state keys grow by the overlap factor."""
     return (
-        src.groupBy(F.window("ts", "1 hour", slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour", slide).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -236,28 +228,22 @@ FROM r GROUP BY 1, 2
 """
 
 
-def sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization via Spark's native ``session_window``:
     consecutive events of a user belong to one session while each
-    arrives within ``gap`` of the previous.  Boundary semantics
-    (verified empirically): an event exactly ``gap`` after its
+    arrives within 30 minutes of the previous.  Boundary semantics
+    (verified empirically): an event exactly 30 minutes after its
     predecessor still MERGES — a new session starts only when the
-    difference is strictly greater than ``gap``.
+    difference is strictly greater than the gap.
 
-    Works on batch and, with ``watermark``, on streams — session state
-    is partitioned by (user, session-window), the stateful operator's
-    shuffle key; the watermark bounds how long an open session is held.
+    Session state is partitioned by (user, session-window), the
+    stateful operator's shuffle key.
 
     Output: one row per session with start, last event time, event
     count and value sum.
     """
-    src = events.withWatermark("ts", watermark) if watermark else events
     return (
-        src.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
@@ -277,8 +263,8 @@ def sessionize(
 #: formulation of the same gap rule (new session iff diff is STRICTLY
 #: greater than the gap, matching session_window's boundary merge).
 def sessionize_sql() -> str:
-    """DuckDB twin of :func:`sessionize` at its default 30-minute gap
-    — same break rule (strictly-greater gap starts a new
+    """DuckDB twin of :func:`sessionize` (30-minute gap) — same break
+    rule (strictly-greater gap starts a new
     session) as the Spark gaps-and-islands build.  NULL-ts rows are
     excluded (Spark ``session_window`` drops them; a NULL user_id
     still forms its own session partition in both engines).
@@ -318,7 +304,7 @@ def drain(
 
     After every micro-batch — including one whose ``on_batch`` raised
     — the staging the batch registered on the stream-execution thread
-    is released (``release_staging(blocking=True)`` in a ``finally``),
+    is released (a blocking ``release_staging()`` in a ``finally``),
     and not only for memory hygiene: banded staging persists plan
     fragments built over a table PATH, and Spark's cache manager
     substitutes a cached fragment into any later semantically-equal
@@ -335,7 +321,7 @@ def drain(
         try:
             on_batch(batch_df, batch_id)
         finally:
-            release_staging(blocking=True)
+            release_staging()
 
     (
         stream.writeStream.foreachBatch(_batch)
