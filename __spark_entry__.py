@@ -17,12 +17,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import (
-    anti_join,
     dedup,
     dedup_keyed_deterministic,
     duplicate_rows,
     equi_join,
-    semi_join,
     stack_legs,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
@@ -36,6 +34,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers
     scratch_dir,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (
+    INGEST_SPLITS,
     stream_ann_index_ingest,
     stream_pq_index_ingest,
 )
@@ -123,7 +122,7 @@ def _q_dedup_keyed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_duplicate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/F1 — duplicate diagnostic (reference etl.py:54)."""
     lineitem = load_table(spark, sf_dir, "lineitem")
-    return duplicate_rows(lineitem, subset=["l_orderkey", "l_linenumber"])
+    return duplicate_rows(lineitem)
 
 
 def _q_na_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,7 +181,7 @@ def _q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "c_custkey"
     )
     customer = load_table(spark, sf_dir, "customer")
-    return semi_join(customer, orders, on="c_custkey").select(
+    return equi_join(customer, orders, on="c_custkey", how="left_semi").select(
         "c_custkey", "c_mktsegment"
     )
 
@@ -193,7 +192,7 @@ def _q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "c_custkey"
     )
     customer = load_table(spark, sf_dir, "customer")
-    return anti_join(customer, orders, on="c_custkey").select(
+    return equi_join(customer, orders, on="c_custkey", how="left_anti").select(
         "c_custkey", "c_mktsegment"
     )
 
@@ -339,7 +338,7 @@ def _q_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    return latest_by(events, keys=["user_id"], order_cols=["ts", "event_id"])
+    return latest_by(events)
 
 
 def _q_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,15 +353,7 @@ def _q_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    out = scd2_intervals(
-        events,
-        keys=["user_id"],
-        ts_col="ts",
-        # full-row tiebreak: duplicate event_ids (replayed CDC loads)
-        # otherwise leave a real window tie and the engines pair
-        # values with validity intervals differently (r8 dup-id probe)
-        tiebreak=["event_id", "event_type", "value"],
-    )
+    out = scd2_intervals(events)
     return out.select(
         "user_id",
         "event_id",
@@ -395,7 +386,7 @@ def _q_events_distributed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(_finite_value())
         .select("event_id", "event_type", "value")
     )
-    return distributed_rank(ev, ["event_type"], "value").orderBy(
+    return distributed_rank(ev).orderBy(
         "event_type", "rnk", "event_id"
     )
 
@@ -438,7 +429,7 @@ def _q_events_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import ewma_by_key
 
     events = load_table(spark, sf_dir, "events").filter(_finite_value())
-    return ewma_by_key(events, keys=["event_type"])
+    return ewma_by_key(events)
 
 
 #: measure-magnitude sanity bound (r9 float-cancellation class, the
@@ -560,9 +551,7 @@ def _q_dq_constraints_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lineitem, "l_returnflag", ["R", "A"],
                 "accepted:l_returnflag",
             ),
-            not_null_violations(
-                customer, "c_name", "not_null:customer.c_name"
-            ),
+            not_null_violations(customer),
         ]
     )
 
@@ -691,17 +680,11 @@ def _q_events_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return changepoint_profile(load_table(spark, sf_dir, "events"))
 
 
-#: Snapshot split for the drift-monitor entries: the events table
-#: spans Jan 2024, so the reference window is the first half and the
-#: "current" window the second.  NULL timestamps fall out of BOTH
-#: sides (no drift signal without a time); the same literal appears in
-#: the DuckDB twins.
-_DRIFT_SPLIT = "2024-01-16 00:00:00"
-
-
 def _drift_sides(spark: SparkSession, sf_dir: str):
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import DRIFT_SPLIT
+
     ev = load_table(spark, sf_dir, "events")
-    cut = F.lit(_DRIFT_SPLIT).cast("timestamp")
+    cut = F.lit(DRIFT_SPLIT).cast("timestamp")
     return ev.where(F.col("ts") < cut), ev.where(F.col("ts") >= cut)
 
 
@@ -806,7 +789,7 @@ def _q_table_diff_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", -(F.col("o_orderkey") + F.lit(1))
     )
     right = mutated.unionByName(inserts)
-    return diff_summary(orders, right, ["o_orderkey"])
+    return diff_summary(orders, right)
 
 
 def _q_pivot_unpivot_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -960,13 +943,12 @@ def _staged_csv_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _staged_orc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage ``orders`` out as priority-partitioned ORC and re-read
     (partition discovery) — the shared ORC round-trip leg."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_orc
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_orc
 
     orders = load_table(spark, sf_dir, "orders")
     stage = scratch_dir("orc_stage", sf_dir)
-    write_orc(orders, stage, partition_by=["o_orderpriority"])
-    return read_orc(spark, stage)
+    write_orc(orders, stage)
+    return spark.read.orc(stage)
 
 
 def _q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1149,14 +1131,9 @@ def _q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("win_end", F.col("last_ts") + F.expr("INTERVAL 30 MINUTES"))
     )
-    return range_join(
-        errors,
-        sessions,
-        start="win_start",
-        end="win_end",
-        by="user_id",
-        bucket_seconds=1800,
-    ).select("event_id", "user_id", "ts", "session_start", "last_ts")
+    return range_join(errors, sessions).select(
+        "event_id", "user_id", "ts", "session_start", "last_ts"
+    )
 
 
 def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1169,7 +1146,7 @@ def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "c_custkey"
     )
     customer = load_table(spark, sf_dir, "customer")
-    j = salted_join(orders, customer, on="c_custkey")
+    j = salted_join(orders, customer)
     return (
         j.groupBy("c_mktsegment")
         .agg(
@@ -1295,13 +1272,17 @@ def _q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment.  availableNow + complete sink makes the result equal the
     batch join+agg, which is the oracle."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming import run_available_now, stream_events
-    from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import stream_static_enrich
 
     ev = stream_events(spark, sf_dir).select("user_id", "event_type", "value")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    enriched = stream_static_enrich(ev, cust, on="user_id")
+    # stream-static join: the static side is re-executed per
+    # micro-batch (no state buffered) and broadcast, so executors join
+    # map-side.  A path-based parquet dim snapshots its file listing
+    # when the frame is created: an external overwrite of the dim is
+    # not picked up — re-create the dim per batch to follow one.
+    enriched = ev.join(F.broadcast(cust), on="user_id", how="inner")
     agg = (
         enriched.groupBy("c_mktsegment", "event_type")
         .agg(
@@ -1339,11 +1320,6 @@ def _q_stream_joins_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Micro-batch id boundaries for the streaming dedup ingest — batch 0
-#: is ids below 200, batch 1 is [200, 350), batch 2 the rest; the SQL
-#: twin replays the same cuts.
-_INGEST_SPLITS = (200, 350)
-
 #: vec_id wave bounds for the streaming ANN-index ingest.  The first
 #: wave MUST contain the corpus's n_cells smallest well-formed ids so
 #: the frozen seed quantizer equals a full-corpus build's (the oracle
@@ -1369,7 +1345,7 @@ def _q_stream_line_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base, stream = _wave_stream(
         spark, "line_dedup_ingest", sf_dir,
-        _id_waves(docs, "doc_id", _INGEST_SPLITS),
+        _id_waves(docs, "doc_id", INGEST_SPLITS),
     )
     table = os.path.join(base, "corpus")
     stream_line_dedup_to_parquet(stream, table, os.path.join(base, "ckpt"))
@@ -1400,11 +1376,11 @@ def _index_ingest_entry(
     )
     idx = os.path.join(base, "index")
     params = ingest(
-        stream, idx, os.path.join(base, "ckpt"), n_cells=llm_queries._IVF_CELLS
+        stream, idx, os.path.join(base, "ckpt"), n_cells=lvec.IVF_CELLS
     )
     return search(
-        spark, idx, llm_queries._query_set(emb), k=llm_queries._TOP_K,
-        n_probe=llm_queries._IVF_PROBE, params=params,
+        spark, idx, llm_queries._query_set(emb), k=lvec.TOP_K,
+        n_probe=lvec.IVF_PROBE, params=params,
     ).orderBy("query_id", "rk")
 
 
@@ -1458,7 +1434,7 @@ def _q_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "n_chars"
     )
     base, stream = _wave_stream(
-        spark, "dedup_ingest", sf_dir, _id_waves(docs, "doc_id", _INGEST_SPLITS)
+        spark, "dedup_ingest", sf_dir, _id_waves(docs, "doc_id", INGEST_SPLITS)
     )
     table = os.path.join(base, "corpus")
     stream_dedup_ingest_to_parquet(stream, table, os.path.join(base, "ckpt"))
@@ -1497,7 +1473,7 @@ def _q_stream_doc_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base, stream = _wave_stream(
         spark, "doc_dedup_ingest", sf_dir,
-        _id_waves(docs, "doc_id", _INGEST_SPLITS),
+        _id_waves(docs, "doc_id", INGEST_SPLITS),
     )
     table = os.path.join(base, "corpus")
     stream_doc_dedup_to_parquet(
@@ -1630,11 +1606,7 @@ def _q_events_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             end.alias(f"{pre}_end"),
         )
 
-    out = interval_overlap_join(
-        _side("click", "l"),
-        _side("purchase", "r"),
-        by="user_id",
-    )
+    out = interval_overlap_join(_side("click", "l"), _side("purchase", "r"))
     return out.select("user_id", "l_id", "r_id", "overlap_seconds").orderBy(
         "user_id", "l_id", "r_id"
     )
@@ -1859,10 +1831,7 @@ def _q_customer_fuzzy_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cust = load_table(spark, sf_dir, "customer")
     return fuzzy_pairs_sorted_neighborhood(
-        cust,
-        id_col="c_custkey",
-        key_col="c_name",
-        block_col=F.substring("c_name", 1, 14),
+        cust, block_col=F.substring("c_name", 1, 14)
     ).orderBy("id_a", "id_b")
 
 
@@ -2211,8 +2180,8 @@ def _q_retention_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     # static overwrite resets the whole table, so the entry is
     # idempotent across bench repeats
     write_parquet(seed.repartition("o_year"), stage, partition_by=["o_year"])
-    delete_where(spark, stage, "o_custkey % 13 = 0", ["o_year"])
-    delete_where(spark, stage, "o_year < 1997", ["o_year"])
+    delete_where(spark, stage, "o_custkey % 13 = 0")
+    delete_where(spark, stage, "o_year < 1997")
     return (
         spark.read.parquet(stage)
         .groupBy(F.col("o_year").cast("int").alias("o_year"))
@@ -2304,15 +2273,7 @@ def _q_stream_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
         ],
     )
     view = os.path.join(base, "view")
-    stream_increment_counts_to_parquet(
-        stream,
-        view,
-        os.path.join(base, "ckpt"),
-        keys=["event_type"],
-        sum_col="s",
-        sum_src="value",
-        partition_by=["event_type"],
-    )
+    stream_increment_counts_to_parquet(stream, view, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(view)
         .select(
@@ -2379,14 +2340,7 @@ def _q_cdc_out_of_order_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, "cdc_ooo", sf_dir, [w.drop("__rn") for w in waves]
     )
     table = os.path.join(base, "table")
-    stream_merge_to_parquet(
-        stream,
-        table,
-        os.path.join(base, "ckpt"),
-        keys=["user_id"],
-        partition_by=["event_type"],
-        version_col="ts",
-    )
+    stream_merge_to_parquet(stream, table, os.path.join(base, "ckpt"))
     return (
         spark.read.parquet(table)
         .select(
@@ -2434,7 +2388,7 @@ def _q_catalog_persistent_roundtrip(
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources import catalog as cat
 
     db = "engine_cat"
-    cat.create_database(spark, db, comment="persistent catalog layer (S6)")
+    cat.create_database(spark, db)
     cat.register_external_table(
         spark, "orders_ext", f"{sf_dir}/orders.parquet", database=db
     )
@@ -2453,9 +2407,7 @@ def _q_catalog_persistent_roundtrip(
             F.col("r_name").alias("region_name"),
         )
     )
-    cat.save_managed_table(
-        dim, "dim_nation", database=db, partition_by=["region_name"]
-    )
+    cat.save_managed_table(dim, "dim_nation", database=db)
     cat.analyze_table(spark, "dim_nation", database=db, columns=["n_nationkey"])
     cat.analyze_table(spark, "orders_ext", database=db)
     cat.create_view(
@@ -2553,7 +2505,6 @@ def _q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_bucketed(
         orders,
         f"bkt_orders_{tag}",
-        8,
         ["o_custkey"],
         sort_cols=["o_custkey"],
         path=os.path.join(base, "orders"),
@@ -2561,7 +2512,6 @@ def _q_bucketed_join_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_bucketed(
         customer,
         f"bkt_customer_{tag}",
-        8,
         ["c_custkey"],
         sort_cols=["c_custkey"],
         path=os.path.join(base, "customer"),
@@ -2611,14 +2561,7 @@ def _q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier").where(F.col("s_nationkey") == 7)
-    joined = bloom_pruned_join(
-        li,
-        sup,
-        fact_key="l_suppkey",
-        dim_key="s_suppkey",
-        num_bits=1 << 16,
-        num_hashes=5,
-    )
+    joined = bloom_pruned_join(li, sup, num_bits=1 << 16)
     return (
         joined.groupBy(
             F.year("l_shipdate").alias("ship_year"),
@@ -2917,20 +2860,11 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.fuzzy
 )
 
 _FUZZY_ORACLE = (
-    _fuzzy_sql(
-        "customer",
-        id_col="c_custkey",
-        key_col="c_name",
-        block_expr="substr(c_name, 1, 14)",
-    )
+    _fuzzy_sql()
     + " ORDER BY id_a, id_b"
 )
 
-_INTERP_ORACLE = _interp_sql(
-    "SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'",
-    "SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'",
-    query_cols="q.event_id, q.user_id, q.ts",
-)
+_INTERP_ORACLE = _interp_sql()
 
 ORACLES: dict[str, str] = {
     "flagship_category_distribution": (
@@ -3588,7 +3522,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.inges
     dedup_ingest_sql as _dedup_ingest_sql,
 )
 
-ORACLES["stream_dedup_ingest"] = _dedup_ingest_sql(splits=_INGEST_SPLITS)
+ORACLES["stream_dedup_ingest"] = _dedup_ingest_sql()
 
 # streaming ANN-index ingest: the id-ordered first wave freezes the
 # same seed quantizer as a full-corpus build, so the post-ingest
@@ -3599,17 +3533,13 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.inges
     line_dedup_ingest_sql as _line_dedup_ingest_sql,
 )
 
-ORACLES["stream_line_dedup_ingest"] = _line_dedup_ingest_sql(
-    splits=_INGEST_SPLITS
-)
+ORACLES["stream_line_dedup_ingest"] = _line_dedup_ingest_sql()
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.ingest import (  # noqa: E402
     doc_dedup_ingest_sql as _doc_dedup_ingest_sql,
 )
 
-ORACLES["stream_doc_dedup_ingest"] = _doc_dedup_ingest_sql(
-    splits=_INGEST_SPLITS
-)
+ORACLES["stream_doc_dedup_ingest"] = _doc_dedup_ingest_sql()
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.anomaly import (  # noqa: E402
     changepoint_profile_sql as _changepoint_sql,
@@ -3669,12 +3599,7 @@ ORACLES["customer_rfm_segments"] = analytics.RFM_SQL
 ORACLES["events_session_attribution"] = _ATTRIBUTION_SQL
 
 ORACLES["events_distributed_rank"] = (
-    _drank_sql(
-        keys=("event_type",),
-        order_col="value",
-        select_cols=("event_id", "event_type", "value"),
-        table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})",
-    )
+    _drank_sql(f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})")
     + " ORDER BY event_type, rnk, event_id"
 )
 
@@ -3870,26 +3795,15 @@ ORACLES["bucketed_join_roundtrip"] = (
 
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (  # noqa: E402
+    DRIFT_CUR_SQL as _DRIFT_CUR_SQL,
     chi2_drift_sql as _chi2_sql,
     ks_2sample_sql as _ks_sql,
     psi_profile_sql as _psi_sql,
 )
 
-_DRIFT_REF_SQL = (
-    f"SELECT * FROM events WHERE ts < TIMESTAMP '{_DRIFT_SPLIT}'"
-)
-_DRIFT_CUR_SQL = (
-    f"SELECT * FROM events WHERE ts >= TIMESTAMP '{_DRIFT_SPLIT}'"
-)
-ORACLES["events_psi_drift"] = _psi_sql(
-    _DRIFT_REF_SQL, _DRIFT_CUR_SQL
-)
-ORACLES["events_ks_drift"] = _ks_sql(
-    _DRIFT_REF_SQL, _DRIFT_CUR_SQL
-)
-ORACLES["events_chi2_drift"] = _chi2_sql(
-    _DRIFT_REF_SQL, _DRIFT_CUR_SQL
-)
+ORACLES["events_psi_drift"] = _psi_sql(_DRIFT_CUR_SQL)
+ORACLES["events_ks_drift"] = _ks_sql(_DRIFT_CUR_SQL)
+ORACLES["events_chi2_drift"] = _chi2_sql(_DRIFT_CUR_SQL)
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.association import (  # noqa: E402
     cooccurrence_lift_sql as _cooc_sql,
@@ -3929,37 +3843,19 @@ ORACLES["events_interval_overlap"] = (
     "ORDER BY l.user_id, l_id, r_id"
 )
 
-ORACLES["stream_psi_monitor"] = _psi_mon_sql(
-    _DRIFT_REF_SQL,
-    [
-        f"{_DRIFT_CUR_SQL} AND event_id % 3 = {k}"
-        for k in range(3)
-    ],
-)
+ORACLES["stream_psi_monitor"] = _psi_mon_sql()
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import (  # noqa: E402
     stream_ks_monitor_sql as _ks_mon_sql,
 )
 
-ORACLES["stream_ks_monitor"] = _ks_mon_sql(
-    _DRIFT_REF_SQL,
-    [
-        f"{_DRIFT_CUR_SQL} AND event_id % 3 = {k}"
-        for k in range(3)
-    ],
-)
+ORACLES["stream_ks_monitor"] = _ks_mon_sql()
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.monitor import (  # noqa: E402
     stream_chi2_monitor_sql as _chi2_mon_sql,
 )
 
-ORACLES["stream_chi2_monitor"] = _chi2_mon_sql(
-    _DRIFT_REF_SQL,
-    [
-        f"{_DRIFT_CUR_SQL} AND event_id % 3 = {k}"
-        for k in range(3)
-    ],
-)
+ORACLES["stream_chi2_monitor"] = _chi2_mon_sql()
 
 
 def oracle_sql() -> dict[str, str]:

@@ -31,7 +31,7 @@ def dim(spark):
     base = [(i, f"d{i}") for i in range(80)]
     dupes = [(7, "d7-dup"), (13, "d13-dup")]
     return spark.createDataFrame(
-        base + dupes + [(None, "d-null")], "d_k int, d_name string"
+        base + dupes + [(None, "d-null")], "s_suppkey int, d_name string"
     )
 
 
@@ -39,59 +39,58 @@ def dim(spark):
 def fact(spark):
     # keys 0..399 → 20% match; plus NULL fact keys
     rows = [(i % 400, i) for i in range(4000)] + [(None, -1), (None, -2)]
-    return spark.createDataFrame(rows, "f_k int, payload int")
+    return spark.createDataFrame(rows, "l_suppkey int, payload int")
 
 
 def test_inner_equals_plain_join(dim, fact):
     got = bloom_pruned_join(
-        fact, dim, fact_key="f_k", dim_key="d_k", num_bits=1 << 10, num_hashes=5
+        fact, dim, num_bits=1 << 10
     )
-    want = fact.join(dim, fact["f_k"] == dim["d_k"], "inner")
-    assert _rows(got, "f_k", "payload", "d_name") == _rows(
-        want, "f_k", "payload", "d_name"
+    want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
+    assert _rows(got, "l_suppkey", "payload", "d_name") == _rows(
+        want, "l_suppkey", "payload", "d_name"
     )
 
 
 def test_string_keys(spark):
     dim = spark.createDataFrame(
-        [("alpha",), ("beta",), ("γάμμα",)], "d_k string"
+        [("alpha",), ("beta",), ("γάμμα",)], "s_suppkey string"
     )
     fact = spark.createDataFrame(
         [(w, i) for i, w in enumerate(["alpha", "beta", "γάμμα", "delta", "x"] * 50)],
-        "f_k string, payload int",
+        "l_suppkey string, payload int",
     )
     got = bloom_pruned_join(
-        fact, dim, fact_key="f_k", dim_key="d_k", num_bits=1 << 8, num_hashes=4
+        fact, dim, num_bits=1 << 8
     )
-    want = fact.join(dim, fact["f_k"] == dim["d_k"], "inner")
-    assert _rows(got, "f_k", "payload") == _rows(want, "f_k", "payload")
+    want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
+    assert _rows(got, "l_suppkey", "payload") == _rows(want, "l_suppkey", "payload")
 
 
 def test_empty_dim_yields_empty_join(spark, fact):
-    empty = spark.createDataFrame([], "d_k int, d_name string")
+    empty = spark.createDataFrame([], "s_suppkey int, d_name string")
     got = bloom_pruned_join(
-        fact, empty, fact_key="f_k", dim_key="d_k", num_bits=1 << 10, num_hashes=5
+        fact, empty, num_bits=1 << 10
     )
     assert got.count() == 0
 
 
 def test_null_fact_keys_pruned_early(spark, dim, fact):
-    sketch = build_bloom(dim, "d_k", num_bits=1 << 10, num_hashes=5)
-    pruned = bloom_prune(fact, "f_k", sketch, num_bits=1 << 10, num_hashes=5)
-    assert pruned.where(F.col("f_k").isNull()).count() == 0
+    sketch = build_bloom(dim, num_bits=1 << 10)
+    pruned = bloom_prune(fact, sketch, num_bits=1 << 10)
+    assert pruned.where(F.col("l_suppkey").isNull()).count() == 0
 
 
 def test_fpp_bounded(spark):
     # disjoint keyspaces: every kept row is a false positive
-    dim = spark.range(0, 1000).withColumnRenamed("id", "d_k")
-    fact = spark.range(10_000, 30_000).withColumnRenamed("id", "f_k")
-    # textbook sizing for 1000 keys at 1%: m = 9,585 bits (rounded up
-    # to the power of two 2^14), h = round(m/n · ln 2) = 7
-    num_bits, num_hashes = 1 << 14, 7
-    sketch = build_bloom(dim, "d_k", num_bits=num_bits, num_hashes=num_hashes)
-    kept = bloom_prune(
-        fact, "f_k", sketch, num_bits=num_bits, num_hashes=num_hashes
-    ).count()
+    dim = spark.range(0, 1000).withColumnRenamed("id", "s_suppkey")
+    fact = spark.range(10_000, 30_000).withColumnRenamed("id", "l_suppkey")
+    # textbook sizing for 1000 keys at 1%: m = 9,585 bits, rounded up
+    # to the power of two 2^14; at NUM_HASHES = 5 hashes the expected
+    # rate is (1 - e^(-5·1000/2^14))^5 ≈ 0.13%
+    num_bits = 1 << 14
+    sketch = build_bloom(dim, num_bits=num_bits)
+    kept = bloom_prune(fact, sketch, num_bits=num_bits).count()
     # sized for 1%; 5x headroom keeps the pin regression-only
     assert kept <= 0.05 * 20_000, f"fpp blowout: {kept}/20000 false positives"
 
@@ -102,8 +101,8 @@ def test_sketch_partition_invariant(spark):
     keys = [(i * 37 % 500,) for i in range(500)]
     want = None
     for parts in (1, 3, 17):
-        df = spark.createDataFrame(keys, "d_k int").repartition(parts)
-        sketch = build_bloom(df, "d_k", num_bits=1 << 12, num_hashes=5)
+        df = spark.createDataFrame(keys, "s_suppkey int").repartition(parts)
+        sketch = build_bloom(df, num_bits=1 << 12)
         got = list(sketch.collect()[0][0])
         if want is None:
             want = got
@@ -116,8 +115,8 @@ def test_sketch_is_bounded(spark):
     # num_bits/64 words no matter the dimension size — that is both
     # the broadcast-safety contract and the O(1)-ordinal-lookup
     # contract (a map sketch would linear-scan per fact row)
-    dim = spark.range(0, 50_000).withColumnRenamed("id", "d_k")
-    sketch = build_bloom(dim, "d_k", num_bits=1 << 12, num_hashes=5)
+    dim = spark.range(0, 50_000).withColumnRenamed("id", "s_suppkey")
+    sketch = build_bloom(dim, num_bits=1 << 12)
     rows = sketch.collect()
     assert len(rows) == 1
     assert len(rows[0][0]) == (1 << 12) // 64
@@ -125,9 +124,7 @@ def test_sketch_is_bounded(spark):
 
 def test_bad_num_bits_rejected(spark, dim):
     with pytest.raises(ValueError, match="power of two"):
-        build_bloom(dim, "d_k", num_bits=1000, num_hashes=5)
-    with pytest.raises(ValueError, match="num_hashes"):
-        build_bloom(dim, "d_k", num_bits=1 << 10, num_hashes=0)
+        build_bloom(dim, num_bits=1000)
 
 
 def test_prune_filter_precedes_fact_shuffle(spark, dim, fact):
@@ -141,10 +138,7 @@ def test_prune_filter_precedes_fact_shuffle(spark, dim, fact):
         got = bloom_pruned_join(
             fact,
             big_dim,
-            fact_key="f_k",
-            dim_key="d_k",
             num_bits=1 << 10,
-            num_hashes=5,
         )
         plan = got._jdf.queryExecution().executedPlan().toString()
     finally:
@@ -163,53 +157,51 @@ def test_sketch_persists_and_reloads(spark, tmp_path):
     write it to parquet, read it back in a fresh plan, prune with it.
     (Spark's injected runtime filter cannot do this; it is the whole
     point of the explicit operator.)"""
-    dim = spark.range(0, 500).withColumnRenamed("id", "d_k")
+    dim = spark.range(0, 500).withColumnRenamed("id", "s_suppkey")
     fact = spark.range(0, 10_000).select(
-        (F.col("id") % 2_000).alias("f_k"), F.col("id").alias("payload")
+        (F.col("id") % 2_000).alias("l_suppkey"), F.col("id").alias("payload")
     )
-    sketch = build_bloom(dim, "d_k", num_bits=1 << 12, num_hashes=5)
+    sketch = build_bloom(dim, num_bits=1 << 12)
     path = str(tmp_path / "sketch")
     sketch.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    pruned = bloom_prune(fact, "f_k", reloaded, num_bits=1 << 12, num_hashes=5)
-    joined = pruned.join(dim, pruned["f_k"] == dim["d_k"], "inner")
-    want = fact.join(dim, fact["f_k"] == dim["d_k"], "inner")
+    pruned = bloom_prune(fact, reloaded, num_bits=1 << 12)
+    joined = pruned.join(dim, pruned["l_suppkey"] == dim["s_suppkey"], "inner")
+    want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
     assert joined.count() == want.count()
 
 
 def test_reloaded_sketch_params_self_describing(spark, tmp_path):
     """A reloaded sketch needs NO caller-remembered params: bloom_prune
-    reads num_bits/num_hashes off the sketch row itself, so the
+    reads num_bits off the sketch row itself, so the
     persisted artifact cannot be probed with the wrong geometry."""
-    dim = spark.range(0, 500).withColumnRenamed("id", "d_k")
+    dim = spark.range(0, 500).withColumnRenamed("id", "s_suppkey")
     fact = spark.range(0, 10_000).select(
-        (F.col("id") % 2_000).alias("f_k"), F.col("id").alias("payload")
+        (F.col("id") % 2_000).alias("l_suppkey"), F.col("id").alias("payload")
     )
-    sketch = build_bloom(dim, "d_k", num_bits=1 << 12, num_hashes=3)
+    sketch = build_bloom(dim, num_bits=1 << 12)
     path = str(tmp_path / "sketch_sd")
     sketch.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    # no num_bits/num_hashes passed — derived from the sketch columns
-    pruned = bloom_prune(fact, "f_k", reloaded)
-    joined = pruned.join(dim, pruned["f_k"] == dim["d_k"], "inner")
-    want = fact.join(dim, fact["f_k"] == dim["d_k"], "inner")
+    # no num_bits passed — derived from the sketch column
+    pruned = bloom_prune(fact, reloaded)
+    joined = pruned.join(dim, pruned["l_suppkey"] == dim["s_suppkey"], "inner")
+    want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
     assert joined.count() == want.count()
 
 
 def test_mismatched_params_abort_not_false_negative(spark, tmp_path):
-    """Passing params that contradict the sketch's own _NBITS/_NHASH
+    """Passing a num_bits that contradicts the sketch's own _NBITS
     must ABORT eagerly on the driver, never silently drop matching
     fact rows.  Driver validation (not a codegen raise_error row
     guard) because the optimizer may reorder/split an AND chain and
     evaluate — or short-circuit away — the guard conjunct after the
     probe conjuncts already rejected the row (r10 advice)."""
-    dim = spark.range(0, 100).withColumnRenamed("id", "d_k")
-    fact = spark.range(0, 1_000).select((F.col("id") % 200).alias("f_k"))
-    sketch = build_bloom(dim, "d_k", num_bits=1 << 12, num_hashes=3)
+    dim = spark.range(0, 100).withColumnRenamed("id", "s_suppkey")
+    fact = spark.range(0, 1_000).select((F.col("id") % 200).alias("l_suppkey"))
+    sketch = build_bloom(dim, num_bits=1 << 12)
     path = str(tmp_path / "sketch_mm")
     sketch.write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
     with pytest.raises(ValueError, match="do not match the sketch"):
-        bloom_prune(fact, "f_k", reloaded, num_bits=1 << 10, num_hashes=5)
-    with pytest.raises(ValueError, match="do not match the sketch"):
-        bloom_prune(fact, "f_k", reloaded, num_bits=1 << 12, num_hashes=5)
+        bloom_prune(fact, reloaded, num_bits=1 << 10)

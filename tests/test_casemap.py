@@ -102,16 +102,16 @@ class TestFirstMatchCategory:
 class TestSentiment:
     def test_boundaries(self, spark):
         df = spark.createDataFrame(
-            [(1.0,), (2.0,), (2.5,), (3.0,), (3.5,), (5.0,)], "v double"
-        ).withColumn("out", sentiment("v"))
-        out = [r.out for r in df.orderBy("v").collect()]
+            [(1.0,), (2.0,), (2.5,), (3.0,), (3.5,), (5.0,)], "stars double"
+        ).withColumn("out", sentiment())
+        out = [r.out for r in df.orderBy("stars").collect()]
         # reference scripts/etl.py:96-101: <=2 negative, ==3 neutral
         assert out == ["negative", "negative", "positive", "neutral", "positive", "positive"]
 
 
 class TestBucketize:
     def test_ordered_bands(self, spark):
-        expr = bucketize("v", [(10.0, "low"), (20.0, "mid")], "high")
+        expr = bucketize("v", [(10.0, "low"), (20.0, "mid")])
         df = spark.createDataFrame([(5.0,), (10.0,), (15.0,), (25.0,)], "v double")
         out = [r.out for r in df.withColumn("out", expr).orderBy("v").collect()]
         assert out == ["low", "low", "mid", "high"]

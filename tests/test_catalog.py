@@ -12,7 +12,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers
 
 @pytest.fixture()
 def db(spark):
-    cat.create_database(spark, "cat_test", comment="catalog-layer tests")
+    cat.create_database(spark, "cat_test")
     yield "cat_test"
     spark.sql("DROP DATABASE IF EXISTS cat_test CASCADE")
 
@@ -47,22 +47,25 @@ def test_external_partitioned_table_discovers_partitions(spark, db, tmp_path):
 
 def test_managed_table_roundtrip_and_view(spark, db):
     df = spark.createDataFrame(
-        [(1, 1995, 10.0), (2, 1995, 20.0), (3, 1996, 30.0)],
-        "id long, y int, v double",
+        [(1, "ASIA", 10.0), (2, "ASIA", 20.0), (3, "EUROPE", 30.0)],
+        "id long, region_name string, v double",
     )
-    cat.save_managed_table(df, "fact", database=db, partition_by=["y"])
+    cat.save_managed_table(df, "fact", database=db)
     assert "fact" in [t.name for t in spark.catalog.listTables(db)]
+    assert [c.name for c in spark.catalog.listColumns(f"{db}.fact") if c.isPartition] == [
+        "region_name"
+    ]
     cat.create_view(
         spark,
-        "fact_yearly",
-        f"SELECT y, sum(v) AS total FROM {db}.fact GROUP BY y",
+        "fact_by_region",
+        f"SELECT region_name, sum(v) AS total FROM {db}.fact GROUP BY region_name",
         database=db,
     )
     got = {
-        r.y: r.total
-        for r in spark.sql(f"SELECT * FROM {db}.fact_yearly").collect()
+        r.region_name: r.total
+        for r in spark.sql(f"SELECT * FROM {db}.fact_by_region").collect()
     }
-    assert got == {1995: 30.0, 1996: 30.0}
+    assert got == {"ASIA": 30.0, "EUROPE": 30.0}
 
 
 def test_managed_overwrite_reclaims_orphaned_location(spark, db):
@@ -70,7 +73,7 @@ def test_managed_overwrite_reclaims_orphaned_location(spark, db):
     session but the warehouse directory persists — the next session's
     saveAsTable hits LOCATION_ALREADY_EXISTS for a table the catalog
     never heard of.  The overwrite write must reclaim the orphan."""
-    df = spark.createDataFrame([(1, 10.0)], "id long, v double")
+    df = spark.createDataFrame([(1, 10.0, "ASIA")], "id long, v double, region_name string")
     cat.save_managed_table(df, "orphan_t", database=db)
     # simulate the dead-catalog state: drop metadata, resurrect files
     loc = spark.catalog.getDatabase(db).locationUri + "/orphan_t"
@@ -85,7 +88,9 @@ def test_managed_overwrite_reclaims_orphaned_location(spark, db):
     spark.sql(f"DROP TABLE {db}.orphan_t")
     shutil.copytree(stash + "/orphan_t", local)
     # overwrite reclaims and succeeds
-    df2 = spark.createDataFrame([(2, 20.0), (3, 30.0)], "id long, v double")
+    df2 = spark.createDataFrame(
+        [(2, 20.0, "ASIA"), (3, 30.0, "ASIA")], "id long, v double, region_name string"
+    )
     cat.save_managed_table(df2, "orphan_t", database=db)
     got = sorted(
         r.id for r in spark.sql(f"SELECT id FROM {db}.orphan_t").collect()
@@ -103,7 +108,9 @@ def test_external_table_path_with_quote(spark, db, tmp_path):
 
 
 def test_analyze_feeds_row_count_stats(spark, db):
-    df = spark.range(100).select(F.col("id"), (F.col("id") % 5).alias("k"))
+    df = spark.range(100).select(
+        F.col("id"), (F.col("id") % 5).alias("k"), F.lit("ASIA").alias("region_name")
+    )
     cat.save_managed_table(df, "stats_t", database=db)
     cat.analyze_table(spark, "stats_t", database=db, columns=["k"])
     desc = {
@@ -186,7 +193,7 @@ def test_orphan_recovery_handles_mixed_case_table_name(spark, db):
     deriving the managed-table directory, so the orphan-recovery probe
     must normalize a mixed-case table name or it misses the real
     directory and the retry re-raises."""
-    df = spark.createDataFrame([(1, 10.0)], "id long, v double")
+    df = spark.createDataFrame([(1, 10.0, "ASIA")], "id long, v double, region_name string")
     cat.save_managed_table(df, "Orphan_Mixed", database=db)
     loc = spark.catalog.getDatabase(db).locationUri + "/orphan_mixed"
     from urllib.parse import urlparse
@@ -201,7 +208,7 @@ def test_orphan_recovery_handles_mixed_case_table_name(spark, db):
     shutil.copytree(local, stash + "/orphan_mixed")
     spark.sql(f"DROP TABLE {db}.Orphan_Mixed")
     shutil.copytree(stash + "/orphan_mixed", local)
-    df2 = spark.createDataFrame([(2, 20.0)], "id long, v double")
+    df2 = spark.createDataFrame([(2, 20.0, "ASIA")], "id long, v double, region_name string")
     cat.save_managed_table(df2, "Orphan_Mixed", database=db)
     got = [
         r.id for r in spark.sql(f"SELECT id FROM {db}.Orphan_Mixed").collect()

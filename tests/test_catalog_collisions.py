@@ -149,7 +149,7 @@ def test_managed_overwrite_over_external_leaves_files(spark, pq, clean):
     a, _ = pq
     cat.register_external_table(spark, "col_b", a)
     cat.save_managed_table(
-        spark.range(2).selectExpr("id", "'m' AS src"), "col_b"
+        spark.range(2).selectExpr("id", "'m' AS src", "'ASIA' AS region_name"), "col_b"
     )
     assert spark.table("col_b").count() == 2
     assert spark.read.parquet(a).count() == 3

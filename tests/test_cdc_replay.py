@@ -5,8 +5,8 @@ replays": an at-least-once CDC source replays rows and delivers
 batches out of order, so a later batch can carry a STALE version of a
 key the table already updated.  The unversioned replace-merge is
 last-DELIVERED-wins by contract (pinned below); the version-guarded
-path (``upsert_by_key(version_col=...)`` / ``stream_merge_to_parquet
-(version_col=...)`` → ``latest_version_rows``) must converge to the
+path (``upsert_by_key(version_col=...)`` / ``stream_merge_to_parquet``
+→ ``latest_version_rows``) must converge to the
 per-key latest-VERSION state under any schedule.  Probe twin:
 scripts/probe_cdc_replay.py at c84e9fc.
 """
@@ -214,7 +214,19 @@ SCHEDULES = [
 ]
 
 
-def _run_waves(spark, tmp_path, waves, version_col):
+#: The stream merge sink keys on ``user_id``, partitions by
+#: ``event_type`` and versions by ``ts``: the LOG under those names.
+STREAM_SCHEMA = "user_id long, event_type string, ts long, payload string"
+
+
+def _stream_state(spark, path):
+    return {
+        (r.user_id,): (r.event_type, r.ts, r.payload)
+        for r in spark.read.parquet(path).collect()
+    }
+
+
+def _run_waves(spark, tmp_path, waves):
     import glob
     import os
     import shutil
@@ -223,26 +235,19 @@ def _run_waves(spark, tmp_path, waves, version_col):
     os.makedirs(src, exist_ok=True)
     for k, wave in enumerate(waves):
         f = str(tmp_path / f"stage{k}")
-        _df(spark, [LOG[i] for i in wave]).coalesce(1).write.mode(
+        spark.createDataFrame([LOG[i] for i in wave], STREAM_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f)
         dst = os.path.join(src, f"wave{k}.parquet")
         shutil.move(glob.glob(os.path.join(f, "part-*.parquet"))[0], dst)
         os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
     stream = (
-        spark.readStream.schema(SCHEMA)
+        spark.readStream.schema(STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     table = str(tmp_path / "table")
-    stream_merge_to_parquet(
-        stream,
-        table,
-        str(tmp_path / "ckpt"),
-        keys=["id"],
-        partition_by=["part"],
-        version_col=version_col,
-    )
+    stream_merge_to_parquet(stream, table, str(tmp_path / "ckpt"))
     return table
 
 
@@ -250,8 +255,8 @@ def _run_waves(spark, tmp_path, waves, version_col):
 def test_versioned_stream_merge_converges_any_schedule(
     spark, tmp_path, schedule
 ):
-    table = _run_waves(spark, tmp_path, schedule, version_col="v")
-    assert _state(spark, table) == FINAL
+    table = _run_waves(spark, tmp_path, schedule)
+    assert _stream_state(spark, table) == FINAL
 
 
 def test_versioned_stream_merge_full_replay_is_noop(spark, tmp_path):
@@ -260,29 +265,20 @@ def test_versioned_stream_merge_full_replay_is_noop(spark, tmp_path):
     merged state, so the table must be unchanged."""
     import shutil
 
-    table = _run_waves(spark, tmp_path, SCHEDULES[0], version_col="v")
-    before = _state(spark, table)
+    table = _run_waves(spark, tmp_path, SCHEDULES[0])
+    before = _stream_state(spark, table)
     shutil.rmtree(str(tmp_path / "ckpt"))
     stream = (
-        spark.readStream.schema(SCHEMA)
+        spark.readStream.schema(STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(str(tmp_path / "src"))
     )
-    stream_merge_to_parquet(
-        stream,
-        table,
-        str(tmp_path / "ckpt"),
-        keys=["id"],
-        partition_by=["part"],
-        version_col="v",
-    )
-    assert _state(spark, table) == before == FINAL
+    stream_merge_to_parquet(stream, table, str(tmp_path / "ckpt"))
+    assert _stream_state(spark, table) == before == FINAL
 
 
 def test_versioned_bootstrap_collapses_first_batch(spark, tmp_path):
     """The bootstrap batch itself can hold several versions of one key
     (a snapshot-load batch); the table must be key-unique from birth."""
-    table = _run_waves(
-        spark, tmp_path, [[0, 1, 2, 3, 4, 5]], version_col="v"
-    )
-    assert _state(spark, table) == FINAL
+    table = _run_waves(spark, tmp_path, [[0, 1, 2, 3, 4, 5]])
+    assert _stream_state(spark, table) == FINAL

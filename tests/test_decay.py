@@ -18,15 +18,13 @@ HL = HALF_LIFE_S
 
 def _df(spark, rows):
     return spark.createDataFrame(
-        rows, "k STRING, ts TIMESTAMP, value DOUBLE"
+        rows, "event_type STRING, ts TIMESTAMP, value DOUBLE"
     )
 
 
 def _row(spark, rows, key="a"):
-    out = ewma_by_key(
-        _df(spark, rows), keys=["k"],
-    ).collect()
-    return {r["k"]: r for r in out}[key]
+    out = ewma_by_key(_df(spark, rows)).collect()
+    return {r["event_type"]: r for r in out}[key]
 
 
 def test_anchor_event_weighs_one_and_half_life_halves(spark):
@@ -103,10 +101,8 @@ def test_hand_computed_three_point_ewma(spark):
 def test_keys_stay_independent(spark):
     rows = [("a", T0, 1.0), ("b", T0, 100.0)]
     out = {
-        r["k"]: r["ewma"]
-        for r in ewma_by_key(
-            _df(spark, rows), keys=["k"]
-        ).collect()
+        r["event_type"]: r["ewma"]
+        for r in ewma_by_key(_df(spark, rows)).collect()
     }
     # anchor is the TABLE max ts (shared), but values never mix
     assert out == {"a": 1.0, "b": 100.0}

@@ -76,15 +76,15 @@ def test_pack_bins_empty(empty_docs):
 
 def test_split_and_samples_empty(empty_docs):
     _expect_empty(lsmp.split_assign(empty_docs))
-    _expect_empty(lsmp.stratified_sample(empty_docs, "lang", {"en": 0.5}))
-    _expect_empty(lsmp.weighted_take(empty_docs, 10, "n_chars"))
-    _expect_empty(lsmp.take_per_stratum(empty_docs, "lang", 5))
+    _expect_empty(lsmp.stratified_sample(empty_docs))
+    _expect_empty(lsmp.weighted_take(empty_docs))
+    _expect_empty(lsmp.take_per_stratum(empty_docs))
 
 
 def test_mixture_report_empty(empty_docs):
     # zero targeted rows → zero report rows (the rates frame groups an
     # empty relation), not a crash in the feasible-budget division
-    _expect_empty(lsmp.mixture_report(empty_docs, {"en": 0.6, "de": 0.4}))
+    _expect_empty(lsmp.mixture_report(empty_docs, "n_chars"))
 
 
 def test_connected_components_empty(spark):
@@ -113,13 +113,12 @@ def test_dedup_keyed_empty(empty_events):
 
 def test_salted_join_empty_left(spark, smoke_dir, empty_events):
     right = load_table(spark, smoke_dir, "events").select(
-        "event_type"
+        F.col("event_type").alias("c_custkey")
     ).distinct()
     _expect_empty(
         salted_join(
-            empty_events.select("event_id", "event_type"),
+            empty_events.select("event_id", F.col("event_type").alias("c_custkey")),
             right,
-            on="event_type",
         )
     )
 
@@ -146,7 +145,7 @@ def test_vector_family_empty(spark, smoke_dir):
 def test_normalize_text_empty(empty_docs):
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.normalize import normalize_text
 
-    out = normalize_text(empty_docs, flag_col="changed")
+    out = normalize_text(empty_docs)
     assert "changed" in out.columns
     _expect_empty(out)
 
@@ -174,7 +173,7 @@ def test_prefix_contained_empty(empty_docs):
 def test_ewma_empty(empty_events):
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import ewma_by_key
 
-    _expect_empty(ewma_by_key(empty_events, keys=["event_type"]))
+    _expect_empty(ewma_by_key(empty_events))
 
 
 def test_bigram_lm_nll_empty(empty_docs):
@@ -259,10 +258,7 @@ def test_bloom_join_empty_fact(spark, smoke_dir):
     li = load_table(spark, smoke_dir, "lineitem").limit(0)
     sup = load_table(spark, smoke_dir, "supplier")
     _expect_empty(
-        bloom_pruned_join(
-            li, sup, fact_key="l_suppkey", dim_key="s_suppkey",
-            num_bits=1 << 10, num_hashes=5,
-        )
+        bloom_pruned_join(li, sup, num_bits=1 << 10)
     )
 
 

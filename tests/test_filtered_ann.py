@@ -10,15 +10,42 @@ from pyspark.sql import functions as F
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
 
 
-def _emb(spark, n=64, dim=8):
+def _emb(spark, n=64, dim=8, label=lambda i: i % 8):
     rows = [
         (
             i,
             [float((i * 7 + d * 3) % 11 - 5) + 0.25 * d for d in range(dim)],
-            i % 8,
+            label(i),
         )
         for i in range(n)
     ]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+
+
+def _selective(i):
+    """Labels under which FILTERED_ANN_PRED (``label = 3 AND vec_id %
+    7 = 0``) passes exactly the multiples of 7: ~10 of 64 vectors."""
+    return 3 if i % 7 == 0 else i % 8
+
+
+def _matches(emb):
+    return {r.vec_id for r in emb.where(lvec.FILTERED_ANN_PRED).collect()}
+
+
+def _cells_emb(spark):
+    """Four seed cells (ids 0-3 are the unit axes; every other vector
+    leans on axis ``id % 4``) holding 8 predicate matches, two per
+    cell: no 2-cell probe prefix holds TOP_K (5) of them, so every
+    query escalates to the probe-everything rung."""
+    rows = []
+    for i in range(64):
+        v = [0.0] * 4
+        v[i % 4] = 1.0
+        if i >= 4:
+            v[(i + 1) % 4] = 0.001 * i
+        rows.append((i, v, 3 if i % 7 == 0 and 0 < i < 63 else 0))
     return spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     )
@@ -45,21 +72,20 @@ def test_filtered_search_returns_k_under_selective_predicate(
     spark, tmp_path_factory
 ):
     """A predicate that starves the first probe rung must widen, not
-    return < k rows: with only ~8/64 vectors passing, 2-of-8 probed
-    cells rarely hold 4 matches — every query still gets exactly k."""
-    emb = _emb(spark)
+    return < k rows: with only ~10/64 vectors passing, 2-of-8 probed
+    cells rarely hold 5 matches — every query still gets exactly k."""
+    emb = _emb(spark, label=_selective)
+    matches = _matches(emb)
     path = str(tmp_path_factory.mktemp("fivf") / "idx")
     lvec.build_ivf_index(emb, path, n_cells=8, meta_cols=["label"])
-    out = lvec.search_ivf_index_filtered(
-        spark, path, _queries(emb), where="label = 5", k=4, n_probe=2
-    )
+    out = lvec.search_ivf_index_filtered(spark, path, _queries(emb))
     rows = out.collect()
     per_q = {}
     for r in rows:
         per_q.setdefault(r.query_id, []).append(r)
-        assert r.vec_id % 8 == 5  # predicate respected
+        assert r.vec_id in matches  # predicate respected
     assert set(per_q) == {0, 1, 2}
-    assert all(len(v) == 4 for v in per_q.values())
+    assert all(len(v) == lvec.TOP_K for v in per_q.values())
 
 
 def test_filtered_search_final_rung_equals_filtered_bruteforce(
@@ -69,20 +95,18 @@ def test_filtered_search_final_rung_equals_filtered_bruteforce(
     (k > any prefix of cells can hold), the result must equal exact
     bruteforce over the filtered corpus — the ladder's correctness
     anchor."""
-    emb = _emb(spark)
+    emb = _cells_emb(spark)
     q = _queries(emb)
     path = str(tmp_path_factory.mktemp("fivf") / "idx")
-    lvec.build_ivf_index(emb, path, n_cells=8, meta_cols=["label"])
+    lvec.build_ivf_index(emb, path, n_cells=4, meta_cols=["label"])
     got = sorted(
         (r.query_id, r.vec_id, r.cos_sim, r.rk)
-        for r in lvec.search_ivf_index_filtered(
-            spark, path, q, where="label IN (5, 7)", k=12, n_probe=2
-        ).collect()
+        for r in lvec.search_ivf_index_filtered(spark, path, q).collect()
     )
     expect = sorted(
         (r.query_id, r.vec_id, r.cos_sim, r.rk)
         for r in lvec.top_k_bruteforce(
-            emb.where("label IN (5, 7)"), q, k=12
+            emb.where(lvec.FILTERED_ANN_PRED), q, k=lvec.TOP_K
         ).collect()
     )
     assert got == expect
@@ -93,13 +117,12 @@ def test_filtered_search_fewer_than_k_returns_all_matches(
 ):
     """k larger than the whole filtered corpus: the final rung returns
     every match ranked, never errors or pads."""
-    emb = _emb(spark)
+    emb = _emb(spark, label=lambda i: 3 if i in (7, 14, 21) else 0)
     path = str(tmp_path_factory.mktemp("fivf") / "idx")
     lvec.build_ivf_index(emb, path, n_cells=8, meta_cols=["label"])
-    out = lvec.search_ivf_index_filtered(
-        spark, path, _queries(emb, n=1), where="label = 5", k=50, n_probe=2
-    ).collect()
-    n_matches = emb.where("label = 5").count()
+    out = lvec.search_ivf_index_filtered(spark, path, _queries(emb, n=1)).collect()
+    n_matches = len(_matches(emb))
+    assert n_matches < lvec.TOP_K
     assert len(out) == n_matches
     assert [r.rk for r in sorted(out, key=lambda r: r.rk)] == list(
         range(1, n_matches + 1)
@@ -115,9 +138,7 @@ def test_filtered_search_plan_pushes_both_predicates(
     emb = _emb(spark)
     path = str(tmp_path_factory.mktemp("fivf") / "idx")
     lvec.build_ivf_index(emb, path, n_cells=8, meta_cols=["label"])
-    out = lvec.search_ivf_index_filtered(
-        spark, path, _queries(emb), where="label = 5", k=2, n_probe=2
-    )
+    out = lvec.search_ivf_index_filtered(spark, path, _queries(emb))
     plan = out._jdf.queryExecution().executedPlan().toString()
     scans = [
         seg.split("\n")[0]
@@ -163,11 +184,7 @@ def test_filtered_search_empty_query_batch(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("fivf") / "idx")
     lvec.build_ivf_index(emb, path, n_cells=4, meta_cols=["label"])
     out = lvec.search_ivf_index_filtered(
-        spark,
-        path,
-        _queries(emb).where(F.lit(False)),
-        where="label = 5",
-        k=3,
+        spark, path, _queries(emb).where(F.lit(False))
     )
     assert out.count() == 0
     assert out.columns == ["query_id", "vec_id", "cos_sim", "rk"]
@@ -379,9 +396,7 @@ def test_cosine_dedup_delta_admits_only_novel_vectors(spark):
     )
     kept = sorted(
         r.vec_id
-        for r in lvec.cosine_dedup_delta(
-            corpus, delta, n_planes=4
-        ).collect()
+        for r in lvec.cosine_dedup_delta(corpus, delta).collect()
     )
     assert kept == [11, 12]
 
@@ -400,9 +415,7 @@ def test_cosine_dedup_delta_never_joins_corpus_with_itself(spark):
     delta = spark.createDataFrame(
         [(10, [0.0, 1.0])], "vec_id long, embedding array<float>"
     )
-    kept = lvec.cosine_dedup_delta(
-        corpus, delta, n_planes=4
-    ).collect()
+    kept = lvec.cosine_dedup_delta(corpus, delta).collect()
     assert [r.vec_id for r in kept] == [10]
 
 
@@ -420,9 +433,7 @@ def test_cosine_dedup_delta_empty_corpus_admits_everything(spark):
     )
     kept = sorted(
         r.vec_id
-        for r in lvec.cosine_dedup_delta(
-            corpus, delta, n_planes=4
-        ).collect()
+        for r in lvec.cosine_dedup_delta(corpus, delta).collect()
     )
     # NULL drops (no geometry); the ragged 1-dim vector is still
     # finite/nonzero so the dim-agnostic operator keeps it — the
@@ -435,7 +446,7 @@ def test_cosine_dedup_delta_empty_delta(spark):
         [(0, [1.0, 0.0])], "vec_id long, embedding array<float>"
     )
     delta = corpus.where(F.lit(False))
-    out = lvec.cosine_dedup_delta(corpus, delta, n_planes=4)
+    out = lvec.cosine_dedup_delta(corpus, delta)
     assert out.count() == 0
 
 
@@ -464,54 +475,49 @@ def test_pq_filtered_search_returns_k_under_selective_predicate(
     spark, tmp_path_factory
 ):
     """Starvation escalation on the COMPRESSED index (the r14 carried
-    queue item's required pin): with only ~8/64 code rows passing the
-    predicate, 2-of-8 probed cells rarely hold 4 matches — the ladder
+    queue item's required pin): with only ~10/64 code rows passing the
+    predicate, 2-of-8 probed cells rarely hold 5 matches — the ladder
     must widen from the FILTERED cell populations and every query
     still gets exactly k rows, all satisfying the predicate."""
-    emb = _emb(spark)
+    emb = _emb(spark, label=_selective)
+    matches = _matches(emb)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
         emb, path, n_cells=8, meta_cols=["label"]
     )
-    out = lvec.search_ivfpq_index_filtered(
-        spark, path, _queries(emb), where="label = 5", k=4, n_probe=2
-    )
+    out = lvec.search_ivfpq_index_filtered(spark, path, _queries(emb))
     per_q = {}
     for r in out.collect():
         per_q.setdefault(r.query_id, []).append(r)
-        assert r.vec_id % 8 == 5  # predicate respected
+        assert r.vec_id in matches  # predicate respected
     assert set(per_q) == {0, 1, 2}
-    assert all(len(v) == 4 for v in per_q.values())
+    assert all(len(v) == lvec.TOP_K for v in per_q.values())
 
 
 def test_pq_filtered_search_exhaustive_dials_equal_filtered_bruteforce(
     spark, tmp_path_factory
 ):
-    """At verification dials (probe everything, rerank ≥ corpus) the
-    engine-specific codebooks cancel out of the final ordering: every
-    filtered code row becomes a candidate and the exact re-rank IS
-    bruteforce over the filtered corpus — the correctness anchor."""
-    emb = _emb(spark)
+    """At verification dials (probe everything, rerank ≥ the filtered
+    corpus) the engine-specific codebooks cancel out of the final
+    ordering: every filtered code row becomes a candidate and the
+    exact re-rank IS bruteforce over the filtered corpus — the
+    correctness anchor.  The fixture starves every 2-cell prefix, so
+    the ladder reaches the probe-everything rung, and its 8 matches
+    fit the 4·k re-rank budget."""
+    emb = _cells_emb(spark)
     q = _queries(emb)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
-        emb, path, n_cells=8, meta_cols=["label"]
+        emb, path, n_cells=4, meta_cols=["label"]
     )
     got = sorted(
         (r.query_id, r.vec_id, r.cos_sim, r.rk)
-        for r in lvec.search_ivfpq_index_filtered(
-            spark,
-            path,
-            q,
-            where="label IN (5, 7)",
-            k=6,
-            n_probe=8,
-        ).collect()
+        for r in lvec.search_ivfpq_index_filtered(spark, path, q).collect()
     )
     expect = sorted(
         (r.query_id, r.vec_id, r.cos_sim, r.rk)
         for r in lvec.top_k_bruteforce(
-            emb.where("label IN (5, 7)"), q, k=6
+            emb.where(lvec.FILTERED_ANN_PRED), q, k=lvec.TOP_K
         ).collect()
     )
     assert got == expect
@@ -522,20 +528,14 @@ def test_pq_filtered_search_fewer_than_k_returns_all_matches(
 ):
     """k larger than the whole filtered corpus: the final rung returns
     every match ranked, never errors or pads."""
-    emb = _emb(spark)
+    emb = _emb(spark, label=lambda i: 3 if i in (7, 14, 21) else 0)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
         emb, path, n_cells=8, meta_cols=["label"]
     )
-    out = lvec.search_ivfpq_index_filtered(
-        spark,
-        path,
-        _queries(emb, n=1),
-        where="label = 5",
-        k=50,
-        n_probe=2,
-    ).collect()
-    n_matches = emb.where("label = 5").count()
+    out = lvec.search_ivfpq_index_filtered(spark, path, _queries(emb, n=1)).collect()
+    n_matches = len(_matches(emb))
+    assert n_matches < lvec.TOP_K
     assert len(out) == n_matches
     assert [r.rk for r in sorted(out, key=lambda r: r.rk)] == list(
         range(1, n_matches + 1)
@@ -554,9 +554,7 @@ def test_pq_filtered_search_plan_pushes_both_predicates(
     lvec.build_ivfpq_index(
         emb, path, n_cells=8, meta_cols=["label"]
     )
-    out = lvec.search_ivfpq_index_filtered(
-        spark, path, _queries(emb), where="label = 5", k=2, n_probe=2
-    )
+    out = lvec.search_ivfpq_index_filtered(spark, path, _queries(emb))
     plan = out._jdf.queryExecution().executedPlan().toString()
     scans = [
         seg.split("\n")[0]
@@ -577,27 +575,20 @@ def test_pq_index_meta_delta_merge_preserves_metadata(
     """A meta-carrying PQ index: the delta merge must require the
     metadata columns (fail loud when absent) and carry them into the
     merged code partitions so the filtered searcher sees delta rows."""
-    emb = _emb(spark, n=48)
+    # FILTERED_ANN_PRED passes ids 14, 49 and 56: two of them delta rows
+    label = lambda i: 3 if i in (14, 49, 56) else 0  # noqa: E731
+    emb = _emb(spark, n=48, label=label)
     path = str(tmp_path_factory.mktemp("fpq") / "idx")
     lvec.build_ivfpq_index(
         emb, path, n_cells=4, meta_cols=["label"]
     )
-    delta = _emb(spark, n=60).where(F.col("vec_id") >= 48)
+    delta = _emb(spark, n=60, label=label).where(F.col("vec_id") >= 48)
     with pytest.raises(ValueError, match="metadata columns"):
         lvec.add_to_ivfpq_index(delta.drop("label"), path)
     lvec.add_to_ivfpq_index(delta, path)
     codes = spark.read.parquet(f"{path}/codes")
     assert "label" in codes.columns
     assert codes.where(F.col("vec_id") >= 48).count() == 12
-    out = lvec.search_ivfpq_index_filtered(
-        spark,
-        path,
-        _queries(emb),
-        where="label = 3",
-        k=60,
-        n_probe=1,
-    )
+    out = lvec.search_ivfpq_index_filtered(spark, path, _queries(emb))
     got_ids = {r.vec_id for r in out.where("query_id = 0").collect()}
-    assert got_ids == {
-        r.vec_id for r in _emb(spark, n=60).where("label = 3").collect()
-    }
+    assert got_ids == _matches(_emb(spark, n=60, label=label)) == {14, 49, 56}

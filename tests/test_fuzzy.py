@@ -18,16 +18,14 @@ def names(spark):
             (3, "alphz"),   # distance 1 from both, within the window
             (4, "zebra"),   # far away in sort order and distance
         ],
-        "id long, name string",
+        "c_custkey long, c_name string",
     )
 
 
 def test_window_pairs_within_threshold(names):
     got = {
         (r.id_a, r.id_b): r.distance
-        for r in fuzzy_pairs_sorted_neighborhood(
-            names, "id", "name"
-        ).collect()
+        for r in fuzzy_pairs_sorted_neighborhood(names).collect()
     }
     assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 1}
 
@@ -35,11 +33,11 @@ def test_window_pairs_within_threshold(names):
 def test_window_misses_distant_sort_neighbors(spark):
     df = spark.createDataFrame(
         [(1, "alpha"), (2, "alphb"), (3, "alphc"), (4, "alphd"), (5, "alphz")],
-        "id long, name string",
+        "c_custkey long, c_name string",
     )
     got = {
         (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(df, "id", "name").collect()
+        for r in fuzzy_pairs_sorted_neighborhood(df).collect()
     }
     # alpha-alphz (distance 1) are 4 apart in sort order: the 3-row
     # window cannot see them; every closer pair is found
@@ -50,18 +48,16 @@ def test_window_misses_distant_sort_neighbors(spark):
 def test_blocking_cuts_cross_block_pairs(spark):
     df = spark.createDataFrame(
         [(1, "aa1"), (2, "aa2"), (3, "ba2")],
-        "id long, name string",
+        "c_custkey long, c_name string",
     )
     unblocked = {
         (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name"
-        ).collect()
+        for r in fuzzy_pairs_sorted_neighborhood(df).collect()
     }
     blocked = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", block_col=F.substring("name", 1, 1),
+            df, block_col=F.substring("c_name", 1, 1),
         ).collect()
     }
     assert (1, 2) in unblocked and (1, 2) in blocked
@@ -77,17 +73,15 @@ def test_multi_pass_reversed_key_recovers_prefix_typos(spark):
     df = spark.createDataFrame(
         [(1, "smith"), (2, "xmith"), (3, "tiger"), (4, "zzzzz"),
          (5, "umbra"), (6, "vapor"), (7, "wheat")],
-        "id long, name string",
+        "c_custkey long, c_name string",
     )
     fwd = {
         (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(df, "id", "name").collect()
+        for r in fuzzy_pairs_sorted_neighborhood(df).collect()
     }
     assert (1, 2) not in fwd  # prefix typo: not sort-adjacent forward
     rev = fuzzy_pairs_sorted_neighborhood(
-        df.withColumn("rname", F.reverse("name")),
-        "id",
-        "rname",
+        df.withColumn("c_name", F.reverse("c_name"))
     ).select("id_a", "id_b", "distance")
     both = fwd | {(r.id_a, r.id_b) for r in rev.collect()}
     assert (1, 2) in both
@@ -107,13 +101,11 @@ def test_block_col_may_name_another_column(spark):
             (2, "smyth", "111"),
             (3, "smith", "999"),
         ],
-        "id long, name string, zip string",
+        "c_custkey long, c_name string, zip string",
     )
     pairs = {
         (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(
-            df, "id", "name", block_col="zip"
-        ).collect()
+        for r in fuzzy_pairs_sorted_neighborhood(df, block_col="zip").collect()
     }
     # 1-2 share a block and are 1 edit apart; 3 is blocked away
     assert pairs == {(1, 2)}

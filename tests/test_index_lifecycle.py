@@ -17,16 +17,16 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
 
 CODECS = {
     "raw": (
-        lambda emb, path: lvec.build_ivf_index(
-            emb, path, n_cells=4, meta_cols=["label"]
+        lambda emb, path, n_cells=4: lvec.build_ivf_index(
+            emb, path, n_cells=n_cells, meta_cols=["label"]
         ),
         lvec.add_to_ivf_index,
         lvec.search_ivf_index,
         lvec.search_ivf_index_filtered,
     ),
     "pq": (
-        lambda emb, path: lvec.build_ivfpq_index(
-            emb, path, n_cells=4, meta_cols=["label"]
+        lambda emb, path, n_cells=4: lvec.build_ivfpq_index(
+            emb, path, n_cells=n_cells, meta_cols=["label"]
         ),
         lvec.add_to_ivfpq_index,
         lvec.search_ivfpq_index,
@@ -36,9 +36,11 @@ CODECS = {
 
 
 def _emb(spark, lo, hi):
+    # the filtered searchers' FILTERED_ANN_PRED (label = 3 AND vec_id
+    # % 7 = 0) passes the multiples of 7: 7 of the first 48 vectors
     return spark.range(lo, hi).select(
         F.col("id").alias("vec_id"),
-        (F.col("id") % 3).cast("int").alias("label"),
+        F.when(F.col("id") % 7 == 0, 3).otherwise(F.col("id") % 3).cast("int").alias("label"),
         F.array(
             *[F.sin(F.col("id") * (j + 1) + j).cast("float") for j in range(8)]
         ).alias("embedding"),
@@ -120,7 +122,8 @@ def test_merge_with_build_params_derives_nothing(
 def test_null_query_id_rule_is_independent_of_the_ladder(spark, tmp_path, codec):
     """Unfiltered search ranks a NULL-id query like any other; filtered
     search drops it, both when the ladder has several rungs
-    (``n_probe < n_cells``) and when it has one (``n_probe >= n_cells``)."""
+    (``IVF_PROBE`` < 4 cells) and when it has one (``IVF_PROBE`` >= 2
+    cells)."""
     build, _add, search, filtered = CODECS[codec]
     path = str(tmp_path / codec)
     params = build(_emb(spark, 0, 48), path)
@@ -134,12 +137,12 @@ def test_null_query_id_rule_is_independent_of_the_ladder(spark, tmp_path, codec)
         return {r["query_id"] for r in df.select("query_id").distinct().collect()}
 
     assert qids(search(spark, path, q, k=3, n_probe=2, params=params)) == ids | {None}
-    for n_probe in (1, 4):
-        out = filtered(
-            spark, path, q, where="label = 1", k=3, n_probe=n_probe,
-            params=params,
-        )
-        assert qids(out) == ids, n_probe
+    assert len(lvec.probe_ladder(lvec.IVF_PROBE, 4)) > 1
+    assert qids(filtered(spark, path, q, params=params)) == ids
+    one_rung = str(tmp_path / f"{codec}_2cells")
+    params = build(_emb(spark, 0, 48), one_rung, n_cells=2)
+    assert lvec.probe_ladder(lvec.IVF_PROBE, 2) == [2]
+    assert qids(filtered(spark, one_rung, q, params=params)) == ids
 
 
 #: Jobs each call launched on this fixture before the raw and PQ
@@ -163,9 +166,7 @@ def test_calls_with_params_launch_no_more_jobs(spark, tmp_path, codec):
     q = _queries(spark)
     calls = {
         "search": lambda: search(spark, path, q, k=3, n_probe=2, params=params),
-        "filtered": lambda: filtered(
-            spark, path, q, where="label = 1", k=3, n_probe=1, params=params
-        ),
+        "filtered": lambda: filtered(spark, path, q, params=params),
         "add": lambda: add(_emb(spark, 48, 64), path, params=params),
     }
     for call, fn in calls.items():

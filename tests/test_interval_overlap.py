@@ -16,11 +16,11 @@ def _ivl(spark, pre, rows):
     """rows: (key, id, start_min, end_min) — minutes after T0."""
     df = spark.createDataFrame(
         [(k, i, float(s), float(e)) for k, i, s, e in rows],
-        f"k long, {pre}_id long, s double, e double",
+        f"user_id long, {pre}_id long, s double, e double",
     )
     base = F.lit(T0).cast("timestamp")
     return df.select(
-        "k",
+        "user_id",
         f"{pre}_id",
         (base + F.make_dt_interval(mins=F.col("s"))).alias(f"{pre}_start"),
         (base + F.make_dt_interval(mins=F.col("e"))).alias(f"{pre}_end"),
@@ -29,10 +29,10 @@ def _ivl(spark, pre, rows):
 
 def _run(spark, lrows, rrows):
     out = interval_overlap_join(
-        _ivl(spark, "l", lrows), _ivl(spark, "r", rrows), by="k"
+        _ivl(spark, "l", lrows), _ivl(spark, "r", rrows)
     )
     return sorted(
-        (r.k, r.l_id, r.r_id, r.overlap_seconds) for r in out.collect()
+        (r.user_id, r.l_id, r.r_id, r.overlap_seconds) for r in out.collect()
     )
 
 
@@ -88,11 +88,11 @@ def test_null_bounds_drop(spark):
     l = _ivl(spark, "l", [(1, 1, 0, 30)]).unionByName(
         spark.createDataFrame(
             [(1, 5, None, None)],
-            "k long, l_id long, l_start timestamp, l_end timestamp",
+            "user_id long, l_id long, l_start timestamp, l_end timestamp",
         )
     )
     r = _ivl(spark, "r", [(1, 2, 10, 20)])
-    out = interval_overlap_join(l, r, by="k")
+    out = interval_overlap_join(l, r)
     assert [x.l_id for x in out.collect()] == [1]
 
 
@@ -100,4 +100,4 @@ def test_column_clash_rejected(spark):
     l = _ivl(spark, "l", [(1, 1, 0, 30)]).withColumnRenamed("l_id", "id")
     r = _ivl(spark, "r", [(1, 2, 0, 30)]).withColumnRenamed("r_id", "id")
     with pytest.raises(ValueError):
-        interval_overlap_join(l, r, by="k")
+        interval_overlap_join(l, r)

@@ -129,25 +129,23 @@ class TestCsvSink:
 
 class TestOrcSink:
     def test_partitioned_roundtrip_preserves_content(self, spark, orders, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_orc
         from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_orc
 
         out = str(tmp_path / "orders_orc")
-        write_orc(orders, out, partition_by=["o_year"])
-        back = read_orc(spark, out)
+        write_orc(orders, out)
+        back = spark.read.orc(out)
         assert sorted(back.columns) == sorted(orders.columns)
         assert _rows(back.select(*sorted(orders.columns))) == _rows(
             orders.select(*sorted(orders.columns))
         )
 
     def test_predicate_pushdown_reaches_scan(self, spark, orders, tmp_path):
-        from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_orc
         from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_orc
 
         out = str(tmp_path / "orders_orc_pushdown")
         write_orc(orders, out)
         plan = (
-            read_orc(spark, out)
+            spark.read.orc(out)
             .filter(F.col("o_orderkey") == 7)
             ._jdf.queryExecution()
             .executedPlan()
@@ -487,7 +485,7 @@ class TestDeleteWhere:
             for d in os.listdir(root)
             if d.startswith("o_year=")
         }
-        n = delete_where(spark, root, "id = 2", ["o_year"])
+        n = delete_where(spark, root, "id = 2")
         assert n == 1
         got = {(r.id, r.o_year) for r in spark.read.parquet(root).collect()}
         assert got == {(1, 1995), (3, 1996), (4, 1997)}
@@ -503,7 +501,7 @@ class TestDeleteWhere:
 
         root = str(tmp_path / "t")
         self._seed(spark, root)
-        delete_where(spark, root, "o_year = 1996", ["o_year"])  # sole row
+        delete_where(spark, root, "o_year = 1996")  # sole row
         assert not os.path.exists(f"{root}/o_year=1996")
         assert spark.read.parquet(root).count() == 3
 
@@ -514,7 +512,7 @@ class TestDeleteWhere:
 
         root = str(tmp_path / "t")
         self._seed(spark, root)
-        n = delete_where(spark, root, "o_year < 1997", ["o_year"])
+        n = delete_where(spark, root, "o_year < 1997")
         assert n == 2
         assert not os.path.exists(f"{root}/o_year=1995")
         assert not os.path.exists(f"{root}/o_year=1996")
@@ -534,9 +532,7 @@ class TestDeleteWhere:
         )
         write_parquet(df, root, partition_by=["o_year"])
         # SQL DELETE semantics: NULL predicate -> row survives
-        delete_where(
-            spark, root, "payload LIKE 'a%' AND id <> 1", ["o_year"]
-        )
+        delete_where(spark, root, "payload LIKE 'a%' AND id <> 1")
         got = sorted(r.id for r in spark.read.parquet(root).collect())
         assert got == [1, 2]
 
@@ -562,11 +558,11 @@ class TestDeleteWhere:
         write_parquet(df, root, partition_by=["o_year"])
         assert os.path.exists(f"{root}/o_year=__HIVE_DEFAULT_PARTITION__")
         # partial delete: NULL partition keeps its other row
-        delete_where(spark, root, "id = 2", ["o_year"])
+        delete_where(spark, root, "id = 2")
         got = {(r.id, r.o_year) for r in spark.read.parquet(root).collect()}
         assert got == {(1, 1995), (3, None), (4, 1997)}
         # emptying delete: the escaped directory goes away
-        delete_where(spark, root, "id = 3", ["o_year"])
+        delete_where(spark, root, "id = 3")
         assert not os.path.exists(
             f"{root}/o_year=__HIVE_DEFAULT_PARTITION__"
         )
@@ -586,7 +582,7 @@ class TestDeleteWhere:
         self._seed(spark, root)  # ids 1,2 @1995; 3 @1996; 4 @1997
         t1997 = os.path.getmtime(f"{root}/o_year=1997")
         # id 2 trims 1995 (id 1 survives); id 3 empties 1996
-        n = delete_where(spark, root, "id IN (2, 3)", ["o_year"])
+        n = delete_where(spark, root, "id IN (2, 3)")
         assert n == 2
         got = {(r.id, r.o_year) for r in spark.read.parquet(root).collect()}
         assert got == {(1, 1995), (4, 1997)}
@@ -620,7 +616,7 @@ class TestDeleteWhere:
             for d in os.listdir(root)
             if d.startswith("o_year=")
         }
-        assert delete_where(spark, root, "id = 999", ["o_year"]) == 0
+        assert delete_where(spark, root, "id = 999") == 0
         for d, t0 in before.items():
             assert os.path.getmtime(os.path.join(root, d)) == t0, d
 

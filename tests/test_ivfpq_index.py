@@ -46,21 +46,16 @@ def test_persisted_search_equals_in_memory_operator(
     emb = _emb(spark)
     q = _queries(emb)
     path = str(tmp_path_factory.mktemp("ivfpq") / "idx")
-    lvec.build_ivfpq_index(emb, path, n_cells=4)
+    lvec.build_ivfpq_index(emb, path, n_cells=lvec.IVF_CELLS)
     got = sorted(
         tuple(r)
         for r in lvec.search_ivfpq_index(
-            spark, path, q, k=4, n_probe=2
+            spark, path, q, k=lvec.TOP_K, n_probe=2
         ).collect()
     )
-    expect = sorted(
-        tuple(r)
-        for r in lvec.top_k_ann_ivfpq(
-            emb, q, k=4, n_cells=4, n_probe=2
-        ).collect()
-    )
+    expect = sorted(tuple(r) for r in lvec.top_k_ann_ivfpq(emb, q, n_probe=2).collect())
     assert got == expect
-    assert len(got) == 3 * 4
+    assert len(got) == 3 * lvec.TOP_K
 
 
 def test_persisted_search_prunes_code_partitions(spark, tmp_path_factory):
@@ -641,16 +636,12 @@ def test_multirerank_equals_independent_calls(spark):
     emb = _emb(spark)
     q = _queries(emb)
     try:
-        multi = dict(
-            lvec.top_k_ann_ivfpq_multirerank(
-                emb, q, k=4, reranks=(1, 2, 4), n_cells=4, n_probe=2,
-            )
-        )
-        for r in (1, 2, 4):
+        multi = dict(lvec.top_k_ann_ivfpq_multirerank(emb, q))
+        for r in lvec.PQ_RECALL_RERANK:
             solo = sorted(
                 tuple(x)
                 for x in lvec.top_k_ann_ivfpq(
-                    emb, q, k=4, n_cells=4, n_probe=2, rerank=r,
+                    emb, q, n_probe=lvec.IVF_PROBE, rerank=r
                 ).collect()
             )
             got = sorted(tuple(x) for x in multi[r].collect())
@@ -659,28 +650,29 @@ def test_multirerank_equals_independent_calls(spark):
         release_staging()
 
 
-def test_multidial_ivf_equals_independent_calls(spark):
+def test_multidial_ivf_equals_independent_calls(spark, tmp_path_factory):
     """r15 opt pin: top_k_ann_ivf_multidial's shared assignment +
-    scoring pass must reproduce every independent top_k_ann_ivf call
-    row-for-row — the probe-rank prefix cut is the same candidate set
-    each dial's own probe frame produced."""
+    scoring pass must reproduce every independent search row-for-row
+    — the probe-rank prefix cut is the same candidate set each dial's
+    own probe frame produced.  The independent reference per dial is
+    the persisted-index search (same seed quantizer, same scoring as
+    top_k_ann_ivf, pinned equal to it in tests/test_plans.py)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import (
         release_staging,
     )
 
     emb = _emb(spark)
     q = _queries(emb)
+    path = str(tmp_path_factory.mktemp("ivf") / "idx")
+    lvec.build_ivf_index(emb, path, n_cells=lvec.IVF_CELLS)
     try:
-        multi = dict(
-            lvec.top_k_ann_ivf_multidial(
-                emb, q, k=4, n_cells=4, probes=(1, 2, 4)
-            )
-        )
-        for p in (1, 2, 4):
+        multi = dict(lvec.top_k_ann_ivf_multidial(emb, q))
+        assert list(multi) == list(lvec.RECALL_PROBES)
+        for p in lvec.RECALL_PROBES:
             solo = sorted(
                 tuple(x)
-                for x in lvec.top_k_ann_ivf(
-                    emb, q, k=4, n_cells=4, n_probe=p
+                for x in lvec.search_ivf_index(
+                    spark, path, q, k=lvec.TOP_K, n_probe=p
                 ).collect()
             )
             got = sorted(tuple(x) for x in multi[p].collect())

@@ -61,7 +61,7 @@ class TestExactDedup:
         )
         hashes = {
             r.doc_id: r.h
-            for r in df.select("doc_id", ldd.content_hash("text").alias("h")).collect()
+            for r in df.select("doc_id", ldd.content_hash().alias("h")).collect()
         }
         assert hashes[1] == hashes[2] != hashes[3]
 
@@ -81,7 +81,7 @@ class TestNearDupBanded:
             docs.filter("doc_id = 1")
             .select(
                 ltx.minhash_signature_from(
-                    ltx.shingles_from_tokens(ltx.tokens("text"), 3), num_hashes=6
+                    ltx.shingles_from_tokens(ltx.tokens("text"), 3)
                 ).alias("g")
             )
             .collect()[0]
@@ -290,7 +290,7 @@ class TestStagingRelease:
         before = self._persistent_ids(spark)
         docs = spark.read.parquet(f"{smoke_dir}/documents.parquet")
         ldd.near_dup_pairs_banded(docs).collect()
-        ldd.ngram_jaccard_pairs(docs, threshold=0.3).collect()
+        ldd.ngram_jaccard_pairs(docs).collect()
         # near_dup_pairs_banded stages 2 on a small (sub-parallelism)
         # input (the spread source cache + the shingle base);
         # ngram_jaccard_pairs stages 3 (spread source + raw postings +
@@ -383,15 +383,15 @@ class TestTextAnalysis:
     def test_token_counts(self, spark):
         df = spark.createDataFrame([(1, "a b  c d")], "id long, text string")
         row = df.select(
-            ltx.token_count("text").alias("ws"),
-            ltx.bpe_token_count("text").alias("bpe"),
+            ltx.token_count().alias("ws"),
+            ltx.bpe_token_count().alias("bpe"),
         ).collect()[0]
         assert row.ws == 4 and row.bpe == 4
 
     def test_bpe_counts_punct_runs(self, spark):
         df = spark.createDataFrame([(1, "don't stop!! ok?")], "id long, text string")
         # don | ' | t | stop | !! | ok | ? → 7
-        assert df.select(ltx.bpe_token_count("text").alias("n")).collect()[0].n == 7
+        assert df.select(ltx.bpe_token_count().alias("n")).collect()[0].n == 7
 
     def test_lang_id_real_sentences(self, spark):
         df = spark.createDataFrame(
@@ -403,14 +403,14 @@ class TestTextAnalysis:
             ],
             "id long, text string",
         )
-        out = {r.id: r.l for r in df.select("id", ltx.lang_id("text").alias("l")).collect()}
+        out = {r.id: r.l for r in df.select("id", ltx.lang_id().alias("l")).collect()}
         assert out == {1: "en", 2: "de", 3: "fr", 4: "und"}
 
     def test_quality_score_bounds_and_ordering(self, spark):
         df = spark.createDataFrame(
             [(1, "ok"), (2, " ".join(["word"] * 100))], "id long, text string"
         )
-        out = {r.id: r.q for r in df.select("id", ltx.quality_score("text").alias("q")).collect()}
+        out = {r.id: r.q for r in df.select("id", ltx.quality_score().alias("q")).collect()}
         assert 0.0 <= out[1] <= 1.0 and 0.0 <= out[2] <= 1.0
         assert out[2] > out[1]  # long clean text beats a 2-char doc
 
@@ -444,7 +444,7 @@ class TestVectors:
         }
         approx = {
             (r.query_id, r.vec_id): r.cos_sim
-            for r in lvec.top_k_ann_signlsh(emb, q, k=5).collect()
+            for r in lvec.top_k_ann_signlsh(emb, q).collect()
         }
         # Scores must agree wherever both strategies surface a pair …
         for pair in set(exact) & set(approx):
@@ -464,7 +464,7 @@ class TestVectors:
         }
         ivf = {
             (r.query_id, r.vec_id): r.cos_sim
-            for r in lvec.top_k_ann_ivf(emb, q, k=5, n_cells=4, n_probe=2).collect()
+            for r in lvec.top_k_ann_ivf(emb, q).collect()
         }
         for pair in set(exact) & set(ivf):
             assert abs(exact[pair] - ivf[pair]) < 1e-9
@@ -487,27 +487,28 @@ class TestVectors:
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
         exact = lvec.top_k_bruteforce(emb, q, k=5).orderBy("rk").collect()
-        full_probe = lvec.top_k_ann_ivf(
-            emb, q, k=5, n_cells=2, n_probe=2
-        ).orderBy("rk").collect()
+        # IVF_PROBE (2) probes every cell of a two-cell quantizer
+        cents = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "cell_id int, __c array<double>"
+        )
+        full_probe = lvec.top_k_ann_ivf(emb, q, centroids=cents).orderBy("rk").collect()
         assert [r.vec_id for r in exact] == [r.vec_id for r in full_probe]
 
     def test_kmeans_centroids_plug_into_ivf(self, spark, smoke_dir):
         emb = spark.read.parquet(f"{smoke_dir}/embeddings.parquet")
-        cents = lvec.train_centroids_kmeans(emb, n_cells=4)
-        assert cents.count() == 4
+        cents = lvec.train_centroids_kmeans(emb)
+        assert cents.count() == lvec.IVF_CELLS
         q = emb.filter("vec_id = 0").select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
-        out = lvec.top_k_ann_ivf(
-            emb, q, k=3, n_probe=2, centroids=cents
-        ).collect()
-        assert len(out) == 3
+        out = lvec.top_k_ann_ivf(emb, q, centroids=cents).collect()
+        assert len(out) == lvec.TOP_K
         assert out[0].vec_id == 0 and out[0].cos_sim == 1.0
 
     def test_kmeans_ivf_recall_vs_bruteforce(self, spark, smoke_dir):
-        """Pins the KMeans-IVF quality floor: with half the cells
-        probed, recall@5 against exact bruteforce must stay ≥ 0.6, and
+        """Pins the KMeans-IVF quality floor: at the entry's dials
+        (IVF_PROBE of IVF_CELLS cells probed), recall@5 against exact
+        bruteforce must stay ≥ 0.6, and
         surfaced scores must be exact (IVF only prunes candidates, it
         never approximates the cosine)."""
         emb = spark.read.parquet(f"{smoke_dir}/embeddings.parquet")
@@ -518,12 +519,10 @@ class TestVectors:
             (r.query_id, r.vec_id): r.cos_sim
             for r in lvec.top_k_bruteforce(emb, q, k=5).collect()
         }
-        cents = lvec.train_centroids_kmeans(emb, n_cells=4)
+        cents = lvec.train_centroids_kmeans(emb)
         approx = {
             (r.query_id, r.vec_id): r.cos_sim
-            for r in lvec.top_k_ann_ivf(
-                emb, q, k=5, n_probe=2, centroids=cents
-            ).collect()
+            for r in lvec.top_k_ann_ivf(emb, q, centroids=cents).collect()
         }
         hits = set(exact) & set(approx)
         recall = len(hits) / len(exact)
@@ -552,10 +551,13 @@ class TestVectors:
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
         )
         exact = lvec.top_k_bruteforce(emb, q, k=5).orderBy("rk").collect()
+        # IVF_PROBE (2) probes every cell of a two-cell quantizer
+        cents = spark.createDataFrame(
+            [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+            "cell_id int, __c array<double>",
+        )
         full = (
-            lvec.top_k_ann_ivfpq(
-                emb, q, k=5, n_cells=2, n_probe=2, rerank=5
-            )
+            lvec.top_k_ann_ivfpq(emb, q, rerank=5, centroids=cents)
             .orderBy("rk")
             .collect()
         )
@@ -577,9 +579,7 @@ class TestVectors:
         }
         approx = {
             (r.query_id, r.vec_id): r.cos_sim
-            for r in lvec.top_k_ann_ivfpq(
-                emb, q, k=5, n_cells=8, n_probe=4, rerank=8
-            ).collect()
+            for r in lvec.top_k_ann_ivfpq(emb, q, n_probe=4, rerank=8).collect()
         }
         hits = set(exact) & set(approx)
         recall = len(hits) / len(exact)
@@ -628,7 +628,7 @@ class TestNgramJaccard:
         )
         out = {
             (r.id_a, r.id_b): r.jaccard
-            for r in ldd.ngram_jaccard_pairs(docs, threshold=0.1).collect()
+            for r in ldd.ngram_jaccard_pairs(docs).collect()
         }
         # docs 1/2: 9 tokens -> 7 shingles each, 6 shared -> J = 6/8
         assert out == {(1, 2): 0.75}
@@ -636,14 +636,14 @@ class TestNgramJaccard:
     def test_max_df_cuts_boilerplate_shingles(self, spark):
         # every doc shares a boilerplate prefix; in more than MAX_DF
         # docs the prefix shingles drop out and no pair survives
-        rows = [(i, f"standard header text then unique{i} tail{i} words{i}")
+        rows = [(i, f"standard header text then more unique{i} tail{i} words{i}")
                 for i in range(ldd.MAX_DF + 1)]
         docs = spark.createDataFrame(rows, "doc_id long, text string")
-        none = ldd.ngram_jaccard_pairs(docs, threshold=0.2).collect()
+        none = ldd.ngram_jaccard_pairs(docs).collect()
         assert none == []
         # below the cut the shared prefix alone pairs two of them
         some = ldd.ngram_jaccard_pairs(
-            spark.createDataFrame(rows[:2], "doc_id long, text string"), threshold=0.2
+            spark.createDataFrame(rows[:2], "doc_id long, text string")
         ).collect()
         assert len(some) > 0
 
@@ -662,11 +662,12 @@ class TestNgramJaccard:
         )
         out = sorted(
             (r.id_a, r.id_b, r.jaccard)
-            for r in ldd.ngram_jaccard_pairs(docs, threshold=1.0).collect()
+            for r in ldd.ngram_jaccard_pairs(docs).collect()
         )
-        # only the exact pair reaches J = 1.0; docs with fewer than
-        # three tokens (or no text) have no shingles and never pair
-        assert out == [("a", "b", 1.0)]
+        # only the exact pair reaches J = 1.0 (the superset keeps 4 of
+        # its 5 shingles in common); docs with fewer than three tokens
+        # (or no text) have no shingles and never pair
+        assert out == [("a", "b", 1.0), ("a", "c", 0.8), ("b", "c", 0.8)]
 
 
 class TestFrameSampling:
@@ -875,13 +876,11 @@ class TestRecallProfile:
 
         from yelp_review_data_analysis_using_big_data_technologies_spark.plans.llm_queries import (
             _FILTER_LABELS,
-            _N_QUERIES,
-            _TOP_K,
             vec_filtered_topk,
         )
 
         rows = vec_filtered_topk(spark, smoke_dir).collect()
-        assert len(rows) == _N_QUERIES * _TOP_K
+        assert len(rows) == lvec.N_QUERIES * lvec.TOP_K
         emb = spark.read.parquet(f"{smoke_dir}/embeddings.parquet")
         allowed = {
             r.vec_id

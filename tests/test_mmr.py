@@ -26,41 +26,29 @@ def _queries(spark, rows):
 
 
 def test_mmr_prefers_diverse_over_redundant(spark):
-    # q = e_x. d1 = e_x (rel 1.0); d2 nearly parallel to d1 (rel ~.995,
-    # sim(d1,d2) ~.995); d3 at 45° (rel ~.707, sim(d1,d3) ~.707).
-    # Relevance alone ranks d1,d2,d3; with λ=0.5 the second pick is
-    # 0.5·.995 − 0.5·.995 ≈ 0 for d2 vs 0.5·.707 − 0.5·.707·... — d3's
-    # penalty is its sim to d1 (~.707): 0.5·.707−0.5·.707=0 too — use
-    # λ=0.4 so the redundant doc loses: d2: .4·.995−.6·.995 = −.199;
-    # d3: .4·.707−.6·.707 = −.1414 → d3 wins the second slot.
+    # q on the diagonal. d1 = (1, .85) is the most relevant (rel
+    # .996729); d2 = (1, .84) is nearly parallel to d1 (rel .996241,
+    # sim(d1, d2) ~1); d3 = (.8, 1) mirrors d1 across q (rel .993884,
+    # sim(d1, d3) .981708).  Relevance alone ranks d1, d2, d3; at
+    # λ = 0.7 the second pick scores d2: .7·.996241 − .3·1.0 = .397
+    # vs d3: .7·.993884 − .3·.981708 = .401 → d3 wins the second slot.
     emb = _emb(
         spark,
         [
-            (1, [1.0, 0.0]),
-            (2, [0.995, 0.0999]),
-            (3, [0.7071, 0.7071]),
+            (1, [1.0, 0.85]),
+            (2, [1.0, 0.84]),
+            (3, [0.8, 1.0]),
         ],
     )
-    q = _queries(spark, [(0, [1.0, 0.0])])
-    out = mmr_rerank(emb, q, k=3, pool=3, lam=0.4).collect()
+    q = _queries(spark, [(0, [1.0, 1.0])])
+    out = mmr_rerank(emb, q).collect()
     order = [r.vec_id for r in out]
     assert order[0] == 1  # highest relevance always first
     assert order[1] == 3  # diversity beats redundancy
     assert order[2] == 2
     r2 = out[1]
-    # d1 == q, so sim(d3, d1) == rel(d3):
-    # mmr = 0.4·rel − 0.6·rel = −0.2·rel
-    assert math.isclose(r2.mmr, -0.2 * r2.rel, abs_tol=2e-6)
-
-
-def test_mmr_lambda_one_is_pure_relevance(spark):
-    emb = _emb(
-        spark,
-        [(1, [1.0, 0.0]), (2, [0.995, 0.0999]), (3, [0.7071, 0.7071])],
-    )
-    q = _queries(spark, [(0, [1.0, 0.0])])
-    out = mmr_rerank(emb, q, k=3, pool=3, lam=1.0).collect()
-    assert [r.vec_id for r in out] == [1, 2, 3]  # relevance order kept
+    # mmr = λ·rel − (1 − λ)·sim(d3, d1)
+    assert math.isclose(r2.mmr, 0.7 * r2.rel - 0.3 * 0.981708, abs_tol=2e-6)
 
 
 def test_mmr_multiple_queries_independent(spark):
@@ -69,7 +57,7 @@ def test_mmr_multiple_queries_independent(spark):
         [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.9, 0.1]), (4, [0.1, 0.9])],
     )
     q = _queries(spark, [(10, [1.0, 0.0]), (20, [0.0, 1.0])])
-    out = mmr_rerank(emb, q, k=2, pool=4, lam=0.9)
+    out = mmr_rerank(emb, q)
     rows = {(r.query_id, r.rk): r.vec_id for r in out.collect()}
     assert rows[(10, 1)] == 1 and rows[(20, 1)] == 2  # per-query argmax
 
@@ -77,20 +65,18 @@ def test_mmr_multiple_queries_independent(spark):
 def test_mmr_pool_larger_than_corpus_truncates(spark):
     emb = _emb(spark, [(1, [1.0, 0.0]), (2, [0.5, 0.5])])
     q = _queries(spark, [(0, [1.0, 0.0])])
-    out = mmr_rerank(emb, q, k=4, pool=4, lam=0.5).collect()
+    out = mmr_rerank(emb, q).collect()
     assert len(out) == 2  # only two candidates exist; no phantom rows
     assert [r.rk for r in out] == [1, 2]
 
 
 def test_mmr_validation(spark):
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import mmr_rerank_candidates
+
     emb = _emb(spark, [(1, [1.0, 0.0])])
-    q = _queries(spark, [(0, [1.0, 0.0])])
+    cand = spark.createDataFrame([(0, 1, 0.9)], "query_id long, vec_id long, rel double")
     with pytest.raises(ValueError):
-        mmr_rerank(emb, q, k=0)
-    with pytest.raises(ValueError):
-        mmr_rerank(emb, q, k=5, pool=3)
-    with pytest.raises(ValueError):
-        mmr_rerank(emb, q, lam=1.5)
+        mmr_rerank_candidates(cand, emb, k=0)
 
 
 def test_mmr_candidates_generic_id_types(spark):
@@ -109,27 +95,30 @@ def test_mmr_candidates_generic_id_types(spark):
         "vec_id string, embedding array<float>",
     )
     cand = spark.createDataFrame(
-        [("q1", "doc-a", 0.9), ("q1", "doc-b", 0.89), ("q1", "doc-c", 0.7)],
+        [("q1", "doc-a", 0.9), ("q1", "doc-b", 0.89), ("q1", "doc-c", 0.85)],
         "query_id string, vec_id string, rel double",
     )
-    rows = mmr_rerank_candidates(cand, emb, k=2, lam=0.5).orderBy("rk").collect()
+    rows = mmr_rerank_candidates(cand, emb, k=2).orderBy("rk").collect()
     assert [r.vec_id for r in rows] == ["doc-a", "doc-c"]  # diverse beats redundant
     assert rows[0].query_id == "q1" and isinstance(rows[0].vec_id, str)
 
 
 def test_mmr_candidates_respects_external_relevance_order(spark):
-    """rel is taken as-given (RRF scores, model scores): with lam=1
-    the picks are exactly the rel order, whatever geometry says."""
+    """rel is taken as-given (RRF scores, model scores): with mutually
+    orthogonal candidates no diversity penalty applies, so the picks
+    are exactly the rel order and each later score is λ·rel."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import mmr_rerank_candidates
 
-    emb = _emb(spark, [(1, [1.0, 0.0]), (2, [1.0, 0.01]), (3, [0.0, 1.0])])
+    emb = _emb(
+        spark, [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0])]
+    )
     cand = spark.createDataFrame(
         [(0, 3, 0.3), (0, 2, 0.2), (0, 1, 0.1)],
         "query_id long, vec_id long, rel double",
     )
-    rows = mmr_rerank_candidates(cand, emb, k=3, lam=1.0).orderBy("rk").collect()
+    rows = mmr_rerank_candidates(cand, emb, k=3).orderBy("rk").collect()
     assert [r.vec_id for r in rows] == [3, 2, 1]
-    assert [r.mmr for r in rows] == [0.3, 0.2, 0.1]
+    assert [r.mmr for r in rows] == [0.3, 0.14, 0.07]
 
 
 def test_mmr_candidates_duplicate_rows_keep_max_rel(spark):
@@ -147,7 +136,7 @@ def test_mmr_candidates_duplicate_rows_keep_max_rel(spark):
         [(0, 2, 0.1), (0, 1, 0.5), (0, 2, 0.9)],
         "query_id long, vec_id long, rel double",
     ).repartition(3)
-    rows = mmr_rerank_candidates(cand, emb, k=2, lam=1.0).orderBy("rk").collect()
+    rows = mmr_rerank_candidates(cand, emb, k=2).orderBy("rk").collect()
     assert [(r.vec_id, r.rel) for r in rows] == [(2, 0.9), (1, 0.5)]
 
 
@@ -181,17 +170,17 @@ def test_mmr_string_ids_with_duplicate_candidate(spark):
     )
     rows = [
         tuple(r)
-        for r in mmr_rerank_candidates(cand, emb, k=3, lam=0.4)
+        for r in mmr_rerank_candidates(cand, emb, k=3)
         .orderBy("query_id", "rk")
         .collect()
     ]
     assert rows == [
         ("q1", "a", 0.9, 0.9, 1),
-        ("q1", "c", 0.7, -0.144264, 2),
-        ("q1", "b", 0.89, -0.240999, 3),
+        ("q1", "b", 0.89, 0.324501, 2),
+        ("q1", "c", 0.7, 0.257737, 3),
         ("q2", "d", 0.8, 0.8, 1),
-        ("q2", "a", 0.75, 0.3, 2),
-        ("q2", "b", 0.6, -0.356999, 3),
+        ("q2", "a", 0.75, 0.525, 2),
+        ("q2", "b", 0.6, 0.121501, 3),
     ]
 
 
@@ -212,8 +201,8 @@ def test_mmr_large_int64_ids_survive(spark):
     )
     rows = [
         tuple(r)
-        for r in mmr_rerank_candidates(cand, emb, k=2, lam=0.5)
+        for r in mmr_rerank_candidates(cand, emb, k=2)
         .orderBy("rk")
         .collect()
     ]
-    assert rows == [(0, big, 0.9, 0.9, 1), (0, big + 2, 0.7, -0.078747, 2)]
+    assert rows == [(0, big, 0.9, 0.9, 1), (0, big + 1, 0.8, 0.272652, 2)]

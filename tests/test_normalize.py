@@ -26,7 +26,7 @@ def docs(spark):
 def test_nfc_collapses_nfd_twin(spark, docs):
     out = {
         r["doc_id"]: r["text"]
-        for r in normalize_text(docs, flag_col="changed").collect()
+        for r in normalize_text(docs).collect()
     }
     assert out[1] == out[2] == unicodedata.normalize("NFC", "café résumé")
 
@@ -34,7 +34,7 @@ def test_nfc_collapses_nfd_twin(spark, docs):
 def test_changed_flag_marks_only_rewritten_rows(spark, docs):
     flags = {
         r["doc_id"]: r["changed"]
-        for r in normalize_text(docs, flag_col="changed").collect()
+        for r in normalize_text(docs).collect()
     }
     # NFC input, ascii, empty, and NULL are untouched; only NFD changes
     assert flags == {1: False, 2: True, 3: False, 4: False, 5: False}
@@ -47,7 +47,7 @@ def test_null_and_empty_pass_through(spark, docs):
 
 def test_plan_is_arrow_batched_not_row_udf(spark, docs):
     plan = (
-        normalize_text(docs, flag_col="changed")
+        normalize_text(docs)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -1,58 +1,74 @@
 """Option guard (a plain AST scan, no Spark): one value in use is a
-constant.  Every defaulted parameter of a module-level function in the
-package or the entry module must be passed a value other than its
-default by some call outside the tests — the package, the entry
-module, ``bench.py``, ``scripts/`` or ``perfbench/``.  A parameter no
-such call sets is a knob nothing turns: drop it and inline its value.
-Tests are not callers: a value only a test passes is a knob kept for
-the test, so a test reaches the behaviour through its fixture instead.
+constant.  The scan counts the VALUES each parameter of a module-level
+function in the package or the entry module takes across the calls
+outside the tests — the package, the entry module, ``bench.py``,
+``scripts/`` or ``perfbench/`` — and fails on a parameter with exactly
+one value in use: drop it and inline the value, or keep one module
+constant shared with the DuckDB twin.  Tests are not callers: a value
+only a test passes is a knob kept for the test, so a test reaches the
+behaviour through its fixture instead.
 
-A call passes a parameter through a keyword, a positional, a
-``*args`` / ``**kwargs`` spread or a ``functools.partial``.  A literal
-equal to the parameter's default does not count as setting it.  Call
-targets are matched by name (import aliases resolved, without
-scoping), so a call to one function counts for every package function
-of that name.  A call whose target the scan cannot name — a local, a
-subscript or a call result, such as ``queries()[name](spark, data)`` or
+Each call contributes the value it passes, keyed so that a literal
+and a module constant assigned that literal count as one value.  An
+omitted argument counts as the parameter's default; a function with
+no visible call therefore uses its defaults alone.  A ``*args`` /
+``**kwargs`` spread, an expression that is not a literal or module
+constant, and any call whose target the scan cannot name count as
+"unknown", which is never one value.  A call passes a parameter
+through a keyword, a positional, a spread or a ``functools.partial``.
+Call targets are matched by name (import aliases resolved, without
+scoping), so a call to one public function counts for every package
+function of that name; a private (``_``-prefixed) function is reached
+only from its own module or through an import of that module.  A call
+whose target the scan cannot name — a local, a subscript or a call
+result, such as ``queries()[name](spark, data)`` or
 ``_stream_monitor``'s ``monitor`` — counts its keywords and
-positionals for every package function the repo passes as a value.
-Keywords a call passes into a function's ``**kwargs`` (a test helper's
-``**kw``, say) count at the calls in its body that spread them on.
-These rules can only hide an unset parameter.
+positionals as unknown for every package function the repo passes as
+a value, and the required parameters of such a function are skipped:
+its calls are not all visible.  Keywords a call passes into a
+function's ``**kwargs`` (a test helper's ``**kw``, say) reach the
+unnamed calls in its body that spread them on.  These rules can only
+hide a parameter with one value in use.
 
 ``ALLOWED`` names the parameters kept settable anyway; each carries
 the reason.
 
-A second scan covers what the first cannot see: a required parameter
-of a private (``_``-prefixed) module-level helper to which every call
-passes the same literal or module constant (a constant and the literal
-it is assigned count as one value).  Calls reach a private helper only
-from its own module or through an import of that module; a helper the
-repo passes as a value is skipped.
-
-A third scan covers the converse: no call outside the tests passes a
+A second scan covers the converse: no call outside the tests passes a
 package function its own default — a literal equal to it, or the very
 expression the default is written as.  The value would be written
 twice, and a changed default would silently stop reaching that call.
 A different name that happens to hold the same value is left alone:
 a module constant shared with a DuckDB twin is how a call pins its
-dial.  A fourth
-fails on a call that passes a keyword no package function of that
-name accepts: a folded parameter a call still sets, which the other
-scans cannot see and which fails only when that call runs."""
+dial.  A third fails on a call that passes a keyword, or more
+positional arguments, than any package function of that name
+accepts: a folded parameter a call still sets, which the other scans
+cannot see and which fails only when that call runs."""
 
 import ast
 import builtins
 import itertools
 import os
 
-from test_reachability import PKG, ROOT, _sources
+from test_reachability import PKG
+from test_reachability import _read_sources as _files
 
-#: ``path::func.param`` → why a parameter no call sets stays.
+#: ``path::func.param`` → why a parameter with one value in use stays.
 ALLOWED = {
     f"{PKG}/session.py::get_spark.master": (
         "deployment setting: on a cluster the master comes from the "
         "submitting environment, not from code in this repo"
+    ),
+    f"{PKG}/sources/catalog.py::save_managed_table.table": (
+        "storage name: the catalog table a deployment writes is a "
+        "deployment setting, like a path"
+    ),
+    f"{PKG}/sources/catalog.py::create_view.view": (
+        "storage name: the catalog view a deployment defines is a "
+        "deployment setting, like a path"
+    ),
+    f"{PKG}/functions/udafs.py::median_abs_deviation.v": (
+        "the pandas UDF's input Series: Spark binds the column the "
+        "call names to it, and a UDF has no other way to take its input"
     ),
     f"{PKG}/llm/staging.py::release_staging.blocking": (
         "perfbench/run.py calls release_staging(blocking=True); the "
@@ -72,16 +88,6 @@ ALLOWED = {
         "explicitly; its files change only with the benchmark"
     ),
 }
-
-
-def _files():
-    """``path`` → source of every Python file whose calls count: the
-    non-test sources."""
-    out = {}
-    for path in _sources():
-        with open(os.path.join(ROOT, path)) as f:
-            out[path] = f.read()
-    return out
 
 
 def _defines_options(path):
@@ -139,63 +145,55 @@ class _Function:
         pos_defaults = dict(zip(self.positional[len(self.positional) - len(a.defaults):], a.defaults))
         kw_defaults = {p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
         self.defaults = {**pos_defaults, **kw_defaults}
-        self.set = set()
+        self.params = self.positional + [p.arg for p in a.kwonlyargs]
+        self.kwargs = a.kwarg is not None
+        #: param → the key of each value a call passes (``None``: a
+        #: value that is not a constant, or unknown)
+        self.values = {p: set() for p in self.params}
         #: ``path:line path::func.param`` of each call passing a default
         self.redundant = []
-        self.required = [p for p in self.positional + [p.arg for p in a.kwonlyargs] if p not in self.defaults]
-        #: required param → the key of each value a call passes
-        #: (``None``: a value that is not a constant, or unknown)
-        self.values = {p: set() for p in self.required}
-        self.calls = 0
-        self.params = set(self.positional) | {p.arg for p in a.kwonlyargs}
-        self.kwargs = a.kwarg is not None
 
     def accepts(self, keyword):
         return self.kwargs or keyword in self.params
 
-    def passes(self, param, value):
-        """Record that a call passes ``value`` (``None``: an unknown
-        value, such as a spread) to ``param``; whether ``value`` is the
-        parameter's own default."""
-        if param not in self.defaults:
+    def _is_default(self, param, value):
+        """Whether ``value`` is the parameter's own default: a literal
+        equal to it, or the very expression it is written as."""
+        default = self.defaults.get(param)
+        if default is None:
             return False
-        default = self.defaults[param]
-        if value is not None:
-            lit = _literal(value)
-            if lit is not None and lit == _literal(default):
-                return True
-            if lit is None and ast.dump(value) == ast.dump(default):
-                return True
-        self.set.add(param)
-        return False
+        lit = _literal(value)
+        return lit == _literal(default) if lit is not None else ast.dump(value) == ast.dump(default)
 
     def call(self, args, keywords, key=None, where=None):
-        """Record a call.  ``key`` (see :func:`_constants`) records the
-        values it passes to required parameters; ``None``: the call
-        may target a same-named function of another module, so it
-        sets options but leaves those values alone.  ``where``
-        (``path:line``) records each default the call passes back."""
-        given = {}
+        """Record a call.  ``key`` (see :func:`_constants`) maps each
+        value the call passes to its key; ``None``: a call through an
+        unnamed target, whose values are unknown.  An omitted argument
+        is the parameter's default; a spread makes every parameter it
+        may fill unknown.  ``where`` (``path:line``) records each
+        default the call passes back."""
+        given, spread = {}, False
         for i, arg in enumerate(args):
             if isinstance(arg, ast.Starred):
-                for p in self.positional[i:]:
-                    self.passes(p, None)
+                given.update(dict.fromkeys(self.positional[i:]))
                 break
             if i < len(self.positional):
                 given[self.positional[i]] = arg
         for kw in keywords:
             if kw.arg is None:
-                for p in self.defaults:
-                    self.passes(p, None)
+                spread = True
             else:
                 given[kw.arg] = kw.value
-        for p, value in given.items():
-            if self.passes(p, value) and where is not None:
-                self.redundant.append(f"{where} {self.key}.{p}")
-        if key is not None:
-            self.calls += 1
-            for p in self.required:
-                self.values[p].add(key(given.get(p)))
+        for p in self.params:
+            value = given.get(p)
+            if value is not None and self._is_default(p, value):
+                if where is not None:
+                    self.redundant.append(f"{where} {self.key}.{p}")
+                value = None
+            elif value is not None or p in given or spread:
+                self.values[p].add(key(value) if key and value is not None else None)
+                continue
+            self.values[p].add(self.default_keys.get(p))
 
 
 def _is_package_module(module, level):
@@ -300,8 +298,9 @@ def _scan(files):
     module-level package and entry functions it reaches.  Returns
     ``(funcs, as_values, unknown)``: name → its ``_Function`` records,
     the names some file passes as a value (whose calls the scan cannot
-    see), and ``path:line func(keyword=)`` of each call passing a
-    keyword that no package function of that name accepts."""
+    see), and ``path:line func(keyword=)`` / ``path:line func(n
+    positionals)`` of each call passing a keyword, or more positional
+    arguments, than any package function of that name accepts."""
     trees = {path: ast.parse(src) for path, src in files.items() if not _is_test(path)}
     funcs = {}
     for path, tree in trees.items():
@@ -311,6 +310,9 @@ def _scan(files):
                     funcs.setdefault(node.name, []).append(_Function(path, node))
     ctx = {path: _File(path, tree, funcs) for path, tree in trees.items()}
     key = _constants(trees.values())
+    for fs in funcs.values():
+        for f in fs:
+            f.default_keys = {p: key(d) or ast.dump(d) for p, d in f.defaults.items()}
 
     # where each definition's ``**kwargs`` goes: the calls in its body
     # that spread it on
@@ -342,7 +344,6 @@ def _scan(files):
         for kind, target in spreads[id(fdef)]:
             if kind == "package":
                 for f in target:
-                    f.call([], extra)
                     forward(f.node, extra, depth + 1)
             elif kind == "local" and not isinstance(target, ast.ClassDef):
                 forward(target, extra, depth + 1)
@@ -369,9 +370,13 @@ def _scan(files):
                     for k in node.keywords
                     if k.arg and not any(f.accepts(k.arg) for f in target)
                 ]
+                if not any(isinstance(a, ast.Starred) for a in args) and not any(
+                    f.node.args.vararg or len(args) <= len(f.positional) for f in target
+                ):
+                    unknown.append(f"{path}:{node.lineno} {c.name_of(func)}({len(args)} positionals)")
                 for f in target:
-                    reached = c.reaches(path, func, f)
-                    f.call(args, node.keywords, key if reached else None, f"{path}:{node.lineno}" if reached else None)
+                    if c.reaches(path, func, f):
+                        f.call(args, node.keywords, key, f"{path}:{node.lineno}")
                     forward(f.node, node.keywords)
             elif kind == "local" and not isinstance(target, ast.ClassDef):
                 forward(target, node.keywords)
@@ -393,34 +398,29 @@ def _scan(files):
         for f in funcs[name]:
             for args, keywords in unnamed:
                 f.call(args, keywords)
+    # a function with no visible call uses its defaults alone
+    for fs in funcs.values():
+        for f in fs:
+            for p, values in f.values.items():
+                values.update(() if values else [f.default_keys.get(p)])
     return funcs, as_values, sorted(unknown)
 
 
-def _unset(files):
-    """Sorted ``path::func.param`` of every defaulted parameter of a
-    module-level package or entry function that no call in ``files``
-    passes a non-default value."""
-    funcs, _, _ = _scan(files)
-    return sorted(
-        f"{f.key}.{p}" for fs in funcs.values() for f in fs for p in f.defaults if p not in f.set
-    )
-
-
-def _fixed(files):
-    """Sorted ``path::func.param`` of every required parameter of a
-    module-level private (``_``-prefixed) package or entry function to
-    which every call in ``files`` passes the same literal or module
-    constant.  A function some file passes as a value is skipped: its
-    calls are not all visible."""
+def _single(files):
+    """Sorted ``path::func.param`` of every parameter of a module-level
+    package or entry function with exactly one value in use across the
+    calls in ``files``.  A function with no visible call uses its
+    defaults alone.  A required parameter of a function some file
+    passes as a value is skipped: its calls are not all visible."""
     funcs, as_values, _ = _scan(files)
     return sorted(
         f"{f.key}.{p}"
         for name, fs in funcs.items()
-        if name.startswith("_") and name not in as_values
         for f in fs
-        if f.calls
-        for p in f.required
-        if len(f.values[p]) == 1 and None not in f.values[p]
+        for p in f.params
+        if (p in f.defaults or name not in as_values)
+        and len(f.values[p]) == 1
+        and None not in f.values[p]
     )
 
 
@@ -465,23 +465,7 @@ def test_scan_flags_a_parameter_no_call_sets():
         "tests/test_m.py": f"from {PKG}.m import f\nf(0, unset=4, same='y')\n",
     }
     m = f"{PKG}/m.py::"
-    assert _unset(planted) == [m + "f.same", m + "f.unset", m + "g.by"]
-
-
-def test_every_option_is_set_by_some_call():
-    unset = [p for p in _unset(_files()) if p not in ALLOWED]
-    assert unset == [], (
-        "defaulted parameters no call sets to another value (inline "
-        "the value as a constant and delete the parameter):\n  " + "\n  ".join(unset)
-    )
-
-
-def test_allowlist_holds_only_unset_options():
-    options = sorted(p for p in ALLOWED if " " not in p)
-    assert options == [p for p in _unset(_files()) if p in ALLOWED]
-    funcs, _, _ = _scan(_files())
-    sites = {_call_site(r) for fs in funcs.values() for f in fs for r in f.redundant}
-    assert sorted(p for p in ALLOWED if " " in p) == sorted(sites & set(ALLOWED))
+    assert _single(planted) == [m + "f.same", m + "f.unset", m + "g.by"]
 
 
 def test_scan_flags_a_required_parameter_every_call_fixes():
@@ -501,16 +485,44 @@ def test_scan_flags_a_required_parameter_every_call_fixes():
         "tests/test_m.py": f"from {PKG}.m import _h\n_h(0, 'ts', 4)\n",
     }
     m = f"{PKG}/m.py::"
-    assert _fixed(planted) == [m + "_h.col", m + "_h.n"]
+    assert _single(planted) == [m + "_h.col", m + "_h.n"]
 
 
-def test_no_private_helper_parameter_is_fixed_by_every_call():
-    fixed = _fixed(_files())
-    assert fixed == [], (
-        "required parameters of private helpers to which every call "
-        "passes the same literal or module constant (fold the value "
-        "into the helper and delete the parameter):\n  " + "\n  ".join(fixed)
+def test_scan_counts_values_not_setters():
+    planted = {
+        f"{PKG}/m.py": (
+            "T = 0.3\n"
+            "def f(df, threshold=0.5, *, by=None, k=1):\n    return df\n"
+            "def pub(df, col, n):\n    return df\n"
+            "def run(df, y, n):\n"
+            "    f(df, 0.3, by='id')\n    f(y, threshold=T, by='id', k=n)\n"
+            "    pub(df, 'text', 2)\n    return pub(y, col='text', n=n)\n"
+        ),
+        "scripts/m_cli.py": f"from {PKG}.m import f\nf(0, T, by='id', k=2)\n",
+        # a test-only second value changes nothing
+        "tests/test_m.py": (
+            f"from {PKG}.m import f, pub\nf(0, 0.9, by='ts')\npub(0, 'title', 1)\n"
+        ),
+    }
+    m = f"{PKG}/m.py::"
+    assert _single(planted) == [m + "f.by", m + "f.threshold", m + "pub.col"]
+
+
+def test_every_parameter_has_two_values_in_use():
+    single = [p for p in _single(_files()) if p not in ALLOWED]
+    assert single == [], (
+        "parameters with one value in use across the non-test calls "
+        "(inline the value, or one module constant shared with the "
+        "SQL twin, and delete the parameter):\n  " + "\n  ".join(single)
     )
+
+
+def test_allowlist_holds_only_single_valued_parameters():
+    options = sorted(p for p in ALLOWED if " " not in p)
+    assert options == [p for p in _single(_files()) if p in ALLOWED]
+    funcs, _, _ = _scan(_files())
+    sites = {_call_site(r) for fs in funcs.values() for f in fs for r in f.redundant}
+    assert sorted(p for p in ALLOWED if " " in p) == sorted(sites & set(ALLOWED))
 
 
 def test_scan_flags_a_call_that_passes_a_default():
@@ -553,9 +565,22 @@ def test_scan_flags_a_keyword_no_target_accepts():
     assert unknown == ["scripts/m_cli.py:2 f(folded=)"]
 
 
+def test_scan_flags_a_positional_no_target_takes():
+    planted = {
+        f"{PKG}/m.py": (
+            "def f(a, k=1):\n    return a\n"
+            "def g(a, *rest):\n    return a\n"
+            "def run(df, xs):\n    f(df, 2)\n    g(df, 1, 2, 3)\n    f(*xs)\n    return f(df, 2, 3)\n"
+        ),
+    }
+    _, _, unknown = _scan(planted)
+    assert unknown == [f"{PKG}/m.py:9 f(3 positionals)"]
+
+
 def test_no_call_passes_a_keyword_its_target_lacks():
     _, _, unknown = _scan(_files())
     assert unknown == [], (
-        "calls that pass a keyword no package function of that name "
-        "accepts (a folded parameter the call still sets):\n  " + "\n  ".join(unknown)
+        "calls that pass a keyword, or more positionals, than any package "
+        "function of that name accepts (a folded parameter the call still "
+        "sets):\n  " + "\n  ".join(unknown)
     )

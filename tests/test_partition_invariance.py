@@ -88,11 +88,10 @@ def test_split_assign_invariant(docs_by_parts):
 
 
 def test_stratified_sample_invariant(docs_by_parts):
-    fr = {"en": 0.5, "de": 0.25}
     _assert_invariant(
         _runs(
             docs_by_parts,
-            lambda d: lsmp.stratified_sample(d, "lang", fr).select("doc_id"),
+            lambda d: lsmp.stratified_sample(d).select("doc_id"),
         )
     )
 
@@ -101,7 +100,7 @@ def test_weighted_take_invariant(docs_by_parts):
     _assert_invariant(
         _runs(
             docs_by_parts,
-            lambda d: lsmp.weighted_take(d, 50, "n_chars").select(
+            lambda d: lsmp.weighted_take(d).select(
                 "doc_id", "priority"
             ),
         )
@@ -112,7 +111,7 @@ def test_take_per_stratum_invariant(docs_by_parts):
     _assert_invariant(
         _runs(
             docs_by_parts,
-            lambda d: lsmp.take_per_stratum(d, "lang", 7).select(
+            lambda d: lsmp.take_per_stratum(d).select(
                 "doc_id", "lang"
             ),
         )
@@ -124,7 +123,9 @@ def test_mixture_sample_invariant(docs_by_parts):
     _assert_invariant(
         _runs(
             docs_by_parts,
-            lambda d: lsmp.mixture_sample(d, wt).select("doc_id"),
+            lambda d: lsmp.mixture_sample(
+                d.withColumnRenamed("n_chars", "n_tokens"), wt
+            ).select("doc_id"),
         )
     )
 
@@ -220,7 +221,7 @@ def test_normalize_text_invariant(docs_by_parts):
     _assert_invariant(
         _runs(
             docs_by_parts,
-            lambda d: normalize_text(d, flag_col="changed").select(
+            lambda d: normalize_text(d).select(
                 "doc_id", "text", "changed"
             ),
         )
@@ -233,7 +234,7 @@ def test_ewma_invariant(events_by_parts):
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import ewma_by_key
 
     _assert_invariant(
-        _runs(events_by_parts, lambda d: ewma_by_key(d, keys=["event_type"]))
+        _runs(events_by_parts, lambda d: ewma_by_key(d))
     )
 
 
@@ -296,11 +297,7 @@ def test_distributed_rank_invariant(events_by_parts):
     _assert_invariant(
         _runs(
             events_by_parts,
-            lambda d: distributed_rank(
-                d.select("event_id", "event_type", "value"),
-                ["event_type"],
-                "value",
-            ),
+            lambda d: distributed_rank(d.select("event_id", "event_type", "value")),
         )
     )
 

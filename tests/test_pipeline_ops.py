@@ -2,6 +2,7 @@
 components, deterministic splits/sampling, TF-IDF, token chunking,
 and int8 embedding quantization."""
 
+import hashlib
 import math
 
 import pytest
@@ -144,15 +145,20 @@ class TestStratifiedSample:
             "doc_id long, lang string",
         )
 
-    def test_full_fraction_keeps_stratum(self, rows):
-        out = lsmp.stratified_sample(rows, "lang", {"en": 1.0})
-        assert out.count() == 100
-        assert out.filter("lang = 'de'").count() == 0  # default 0 drops
+    def test_row_kept_iff_under_its_stratum_fraction(self, spark, rows):
+        extra = spark.createDataFrame([(500 + i, "xx") for i in range(20)], rows.schema)
+        got = {r.doc_id for r in lsmp.stratified_sample(rows.union(extra)).collect()}
+        want = {
+            i
+            for i in range(200)
+            if hashlib.md5(f"{i}{lsmp.SAMPLE_SALT}".encode()).hexdigest()[:8]
+            < lsmp._frac_hex(lsmp.STRAT_FRACTIONS["en" if i % 2 == 0 else "de"])
+        }
+        assert got == want  # a stratum absent from STRAT_FRACTIONS drops
 
     def test_deterministic_subset(self, rows):
-        f = {"en": 0.5, "de": 0.25}
-        a = sorted(r.doc_id for r in lsmp.stratified_sample(rows, "lang", f).collect())
-        b = sorted(r.doc_id for r in lsmp.stratified_sample(rows, "lang", f).collect())
+        a = sorted(r.doc_id for r in lsmp.stratified_sample(rows).collect())
+        b = sorted(r.doc_id for r in lsmp.stratified_sample(rows).collect())
         assert a == b
         assert 0 < len(a) < 200
 
@@ -161,12 +167,7 @@ class TestStratifiedSample:
         # read against nested thresholds) — val/test strata would
         # silently sample to zero.  Salted per purpose, the two draws
         # are independent: a 0.5 sample must hit val/test rows too.
-        sampled = {
-            r.doc_id
-            for r in lsmp.stratified_sample(
-                rows, "lang", {"en": 0.5, "de": 0.5}
-            ).collect()
-        }
+        sampled = {r.doc_id for r in lsmp.stratified_sample(rows).collect()}
         splits = {
             r.doc_id: r.split for r in lsmp.split_assign(rows).collect()
         }
@@ -177,37 +178,33 @@ class TestTakePerStratum:
     @pytest.fixture(scope="class")
     def rows(self, spark):
         return spark.createDataFrame(
-            [(i, "en" if i % 4 != 3 else "de") for i in range(100)],
+            [(i, "en" if i % 4 != 3 else "de") for i in range(100)]
+            + [(100 + i, "zh") for i in range(5)],
             "doc_id long, lang string",
         )
 
     def test_exact_count_per_stratum(self, rows):
-        out = lsmp.take_per_stratum(rows, "lang", k=10)
+        out = lsmp.take_per_stratum(rows)
         counts = {
             r.lang: r.n
             for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        assert counts == {"en": 10, "de": 10}
+        assert counts == {"en": lsmp.TAKE_K, "de": lsmp.TAKE_K, "zh": 5}
 
     def test_small_stratum_returns_all(self, rows):
-        # de has 25 rows; k=40 must return every one, not pad.
-        out = lsmp.take_per_stratum(rows, "lang", k=40)
-        assert out.filter("lang = 'de'").count() == 25
-        assert out.filter("lang = 'en'").count() == 40
+        # zh has 5 rows; a take of TAKE_K = 20 must return every one, not pad.
+        out = lsmp.take_per_stratum(rows)
+        assert out.filter("lang = 'zh'").count() == 5
+        assert out.filter("lang = 'en'").count() == lsmp.TAKE_K
 
     def test_deterministic_and_independent_of_sample_draw(self, rows):
-        a = sorted(r.doc_id for r in lsmp.take_per_stratum(rows, "lang", 10).collect())
-        b = sorted(r.doc_id for r in lsmp.take_per_stratum(rows, "lang", 10).collect())
+        a = sorted(r.doc_id for r in lsmp.take_per_stratum(rows).collect())
+        b = sorted(r.doc_id for r in lsmp.take_per_stratum(rows).collect())
         assert a == b
         # The take draw is salted differently from the fractional-sample
-        # draw: the k=10 take must not be a subset of a 40% sample's
-        # survivors (same-hash nesting would force it for en: 10 < 30).
-        sampled = {
-            r.doc_id
-            for r in lsmp.stratified_sample(
-                rows, "lang", {"en": 0.4, "de": 0.4}
-            ).collect()
-        }
+        # draw: the 20-row take must not be a subset of a 50% sample's
+        # survivors (same-hash nesting would force it for en: 20 < 37).
+        sampled = {r.doc_id for r in lsmp.stratified_sample(rows).collect()}
         assert any(i not in sampled for i in a)
 
 
@@ -382,27 +379,27 @@ class TestWeightedTake:
     def rows(self, spark):
         # weights 1..200: inclusion should visibly favor heavy rows
         return spark.createDataFrame(
-            [(i, i + 1) for i in range(200)], "doc_id long, w long"
+            [(i, i + 1) for i in range(200)], "doc_id long, n_chars long"
         )
 
     def test_exactly_k_rows_and_deterministic(self, rows):
-        a = sorted(r.doc_id for r in lsmp.weighted_take(rows, 30, "w").collect())
-        b = sorted(r.doc_id for r in lsmp.weighted_take(rows, 30, "w").collect())
-        assert len(a) == 30 and a == b
+        a = sorted(r.doc_id for r in lsmp.weighted_take(rows).collect())
+        b = sorted(r.doc_id for r in lsmp.weighted_take(rows).collect())
+        assert len(a) == lsmp.WEIGHTED_K and a == b
 
     def test_weight_bias(self, rows):
         # Priority sampling: heavy half (w > 100) should dominate the
-        # sample of a 1..200 linear weight ramp (expected ~2/3).
-        got = {r.doc_id for r in lsmp.weighted_take(rows, 50, "w").collect()}
+        # 100-row sample of a 1..200 linear weight ramp.
+        got = {r.doc_id for r in lsmp.weighted_take(rows).collect()}
         heavy = sum(1 for i in got if i >= 100)
-        assert heavy > 25
+        assert heavy > 50
 
     def test_non_positive_and_null_weights_excluded(self, spark):
         df = spark.createDataFrame(
             [(1, 5), (2, 0), (3, -1), (4, None), (5, 7)],
-            "doc_id long, w long",
+            "doc_id long, n_chars long",
         )
-        got = sorted(r.doc_id for r in lsmp.weighted_take(df, 10, "w").collect())
+        got = sorted(r.doc_id for r in lsmp.weighted_take(df).collect())
         assert got == [1, 5]
 
     def test_priority_is_engine_portable(self, spark):
@@ -411,20 +408,18 @@ class TestWeightedTake:
         import duckdb
 
         df = spark.createDataFrame(
-            [(i, 3 * i + 1) for i in range(50)], "doc_id long, w long"
+            [(i, 3 * i + 1) for i in range(50)], "doc_id long, n_chars long"
         )
         spark_rows = {
             r.doc_id: r.priority
-            for r in df.withColumn(
-                "priority", lsmp.weighted_priority("doc_id", "w")
-            ).collect()
+            for r in df.withColumn("priority", lsmp.weighted_priority()).collect()
         }
         con = duckdb.connect()
-        con.execute("CREATE TABLE t (doc_id BIGINT, w BIGINT)")
+        con.execute("CREATE TABLE documents (doc_id BIGINT, n_chars BIGINT)")
         con.executemany(
-            "INSERT INTO t VALUES (?, ?)", [(i, 3 * i + 1) for i in range(50)]
+            "INSERT INTO documents VALUES (?, ?)", [(i, 3 * i + 1) for i in range(50)]
         )
-        sql = lsmp.weighted_take_sql("t", 50, "w", cols="doc_id, w")
+        sql = lsmp.weighted_take_sql()
         duck_rows = {r[0]: r[2] for r in con.execute(sql).fetchall()}
         assert spark_rows == duck_rows  # bit-identical doubles
 
@@ -487,7 +482,7 @@ class TestPackBins:
         naive = {
             r.doc_id: (r.off, r.off // lpk.BUDGET)
             for r in docs.select(
-                "doc_id", token_count("text").cast("bigint").alias("n")
+                "doc_id", token_count().cast("bigint").alias("n")
             )
             .withColumn("off", F.coalesce(F.sum("n").over(w), F.lit(0).cast("bigint")))
             .collect()
@@ -523,7 +518,22 @@ class TestMixtureSample:
             + [(3000 + i, "junk", 40) for i in range(50)]
         )
         return spark.createDataFrame(
-            rows, "doc_id long, domain string, n_tok long"
+            rows, "doc_id long, domain string, n_tokens long"
+        )
+
+    @pytest.fixture()
+    def langs(self, spark):
+        # Lopsided over the MIXTURE_WEIGHTS languages: en binds (its
+        # 0.4 target is the scarcest), de must downsample to 1/4 and
+        # es/fr/zh to 3/4; the untargeted 'xx' drops.
+        sizes = {"en": 200, "de": 300, "es": 100, "fr": 100, "zh": 100, "xx": 50}
+        rows = [
+            (1000 * k + i, lang, 40)
+            for k, (lang, n) in enumerate(sizes.items())
+            for i in range(n)
+        ]
+        return spark.createDataFrame(
+            rows, "doc_id long, lang string, n_tokens long"
         )
 
     W = {"a": 1 / 3, "b": 1 / 3, "c": 1 / 3}
@@ -532,7 +542,7 @@ class TestMixtureSample:
         rates = {
             r.domain: r
             for r in lsmp.mixture_rates(
-                docs, self.W, domain_col="domain", tokens="n_tok"
+                docs, self.W, domain_col="domain", tokens="n_tokens"
             ).collect()
         }
         # b and c tie as the binding domains (smallest T/w): rate 1.
@@ -544,51 +554,35 @@ class TestMixtureSample:
     def test_untargeted_domain_dropped_and_deterministic(self, docs):
         s1 = sorted(
             r.doc_id
-            for r in lsmp.mixture_sample(
-                docs, self.W, domain_col="domain", tokens="n_tok"
-            ).collect()
+            for r in lsmp.mixture_sample(docs, self.W, domain_col="domain").collect()
         )
         s2 = sorted(
             r.doc_id
-            for r in lsmp.mixture_sample(
-                docs, self.W, domain_col="domain", tokens="n_tok"
-            ).collect()
+            for r in lsmp.mixture_sample(docs, self.W, domain_col="domain").collect()
         )
         assert s1 == s2
         assert all(i < 3000 for i in s1)  # junk domain gone
         assert set(range(1000, 1100)) <= set(s1)  # binding domain intact
 
-    def test_achieved_shares_near_targets(self, docs):
-        rep = {
-            r.domain: r
-            for r in lsmp.mixture_report(
-                docs, self.W, domain_col="domain", tokens="n_tok"
-            ).collect()
-        }
-        assert set(rep) == {"a", "b", "c"}
-        for r in rep.values():
+    def test_achieved_shares_near_targets(self, langs):
+        rep = {r.domain: r for r in lsmp.mixture_report(langs, "n_tokens").collect()}
+        assert set(rep) == set(lsmp.MIXTURE_WEIGHTS)
+        for lang, r in rep.items():
             # per-doc hash granularity: shares land within a few
-            # points of the 1/3 targets on 100-400-doc domains
-            assert abs(r.achieved_share - 1 / 3) < 0.06
+            # points of the targets on 100-300-doc domains
+            assert abs(r.achieved_share - lsmp.MIXTURE_WEIGHTS[lang]) < 0.06
         # accounting consistency
-        assert rep["b"].kept_docs == 100 and rep["b"].kept_tokens == 4000
+        assert rep["en"].kept_docs == 200 and rep["en"].kept_tokens == 8000
 
-    def test_report_matches_duckdb_twin(self, docs):
+    def test_report_matches_duckdb_twin(self, langs):
         import duckdb
 
-        pdf = docs.toPandas()  # noqa: F841  (registered by name below)
+        pdf = langs.toPandas()  # noqa: F841  (registered by name below)
         con = duckdb.connect()
         con.register("documents", pdf)
-        sql = lsmp.mixture_report_sql(
-            self.W, domain_expr="domain", tokens_expr="n_tok"
-        )
+        sql = lsmp.mixture_report_sql("n_tokens")
         oracle = [tuple(r) for r in con.execute(sql).fetchall()]
-        got = [
-            tuple(r)
-            for r in lsmp.mixture_report(
-                docs, self.W, domain_col="domain", tokens="n_tok"
-            ).collect()
-        ]
+        got = [tuple(r) for r in lsmp.mixture_report(langs, "n_tokens").collect()]
         assert [tuple(map(str, t)) for t in got] == [
             tuple(map(str, t)) for t in oracle
         ]
@@ -615,11 +609,6 @@ class TestCcSelfPairContract:
 
 
 class TestEmptyConfigGuards:
-    def test_stratified_sample_rejects_empty_fractions(self, spark):
-        df = spark.createDataFrame([(1, "a")], "doc_id long, s string")
-        with pytest.raises(ValueError, match="at least one stratum"):
-            lsmp.stratified_sample(df, "s", {})
-
     def test_mixture_rejects_empty_weights(self, spark):
         df = spark.createDataFrame(
             [(1, "a", 5)], "doc_id long, domain string, n_tok long"

@@ -58,14 +58,6 @@ def test_dedup_keyed_uses_partial_aggregate_not_window(spark, smoke_dir, queries
     assert plan.count("Aggregate") >= 2 and "Exchange" in plan
 
 
-def test_top_k_compiles_to_take_ordered(spark, smoke_dir):
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import top_k
-    from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
-
-    df = top_k(load_table(spark, smoke_dir, "orders"), [F.desc("o_totalprice")], 10)
-    assert "TakeOrderedAndProject" in _plan(df)
-
-
 def test_near_dup_join_is_bucket_partitioned(spark, smoke_dir, queries):
     plan = _plan(queries["doc_near_dup_banded"](spark, smoke_dir))
     # the candidate join must be an equi-join on the band bucket,
@@ -104,11 +96,11 @@ def test_bucketed_join_is_colocated_no_exchange(spark, smoke_dir, tmp_path_facto
         "c_custkey", "c_mktsegment"
     )
     write_bucketed(
-        orders, "t_orders_b", 8, ["o_custkey"], sort_cols=["o_custkey"],
+        orders, "t_orders_b", ["o_custkey"], sort_cols=["o_custkey"],
         path=str(base / "orders"),
     )
     write_bucketed(
-        customer, "t_customer_b", 8, ["c_custkey"], sort_cols=["c_custkey"],
+        customer, "t_customer_b", ["c_custkey"], sort_cols=["c_custkey"],
         path=str(base / "customer"),
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -152,7 +144,7 @@ def test_bucketed_scan_prunes_buckets_on_key_equality(
     )
     try:
         write_bucketed(
-            orders, "t_orders_bp", 8, ["o_custkey"],
+            orders, "t_orders_bp", ["o_custkey"],
             sort_cols=["o_custkey"], path=str(base / "orders"),
         )
         some_key = orders.select("o_custkey").first()[0]
@@ -257,7 +249,7 @@ def test_ivf_index_search_prunes_cell_partitions(spark, smoke_dir, tmp_path_fact
     # pruned result == in-memory operator result (same seeds/dials)
     expect = sorted(
         (r.query_id, r.vec_id, r.cos_sim, r.rk)
-        for r in lvec.top_k_ann_ivf(emb, queries, k=5, n_probe=2).collect()
+        for r in lvec.top_k_ann_ivf(emb, queries).collect()
     )
     got = sorted(
         (r.query_id, r.vec_id, r.cos_sim, r.rk) for r in out.collect()
@@ -449,7 +441,7 @@ def test_serving_pipeline_keeps_partition_pruning(spark, smoke_dir, tmp_path_fac
         "doc_id", "rk"
     )
     pool = (
-        ltm.rrf_fuse([lex, vec], rrf_k=60)
+        ltm.rrf_fuse([lex, vec])
         .orderBy(F.desc("rrf_score"), F.asc("doc_id"))
         .limit(12)
     )

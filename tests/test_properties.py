@@ -95,21 +95,20 @@ class TestWeightedTakeProperty:
                 st.integers(min_value=0, max_value=10_000),
                 st.integers(min_value=-2, max_value=50),
             ),
-            min_size=1,
-            max_size=30,
+            min_size=90,
+            max_size=140,
             unique_by=lambda t: t[0],
         ),
-        st.integers(min_value=1, max_value=10),
     )
-    def test_top_k_matches_python_model(self, spark, rows, k):
+    def test_top_k_matches_python_model(self, spark, rows):
         """weighted_take == sort by the SAME priority formula in pure
-        Python (md5 + exact float arithmetic), positives only."""
+        Python (md5 + exact float arithmetic), positives only; around
+        WEIGHTED_K = 100 rows, so some draws truncate and some do not."""
         import hashlib
 
-        df = spark.createDataFrame(rows, "doc_id long, w long")
-        got = sorted(
-            r.doc_id for r in lsmp.weighted_take(df, k, "w").collect()
-        )
+        k = lsmp.WEIGHTED_K
+        df = spark.createDataFrame(rows, "doc_id long, n_chars long")
+        got = sorted(r.doc_id for r in lsmp.weighted_take(df).collect())
 
         def pri(doc_id, w):
             h8 = hashlib.md5(
@@ -162,31 +161,33 @@ class TestMixtureParityProperty:
         weights_raw, sizes = wt
         domains = [f"d{i}" for i in range(len(weights_raw))]
         weights = dict(zip(domains, weights_raw))
+        langs = list(lsmp.MIXTURE_WEIGHTS)
         rows, nid = [], 0
-        for dom, n in zip(domains, sizes):
-            for _ in range(n):
-                rows.append((nid, dom, 1 + (nid * 7919) % 97))
+        for i, dom in enumerate(domains):
+            for _ in range(sizes[i]):
+                rows.append((nid, dom, langs[nid % len(langs)], 1 + (nid * 7919) % 97))
                 nid += 1
         df = spark.createDataFrame(
-            rows, "doc_id long, domain string, n_tok long"
+            rows, "doc_id long, src string, lang string, n_tokens long"
         )
-        got = [
-            tuple(map(str, r))
-            for r in lsmp.mixture_report(
-                df, weights, domain_col="domain", tokens="n_tok"
-            ).collect()
-        ]
         con = duckdb.connect()
         con.register("documents", df.toPandas())
+        # the random weights reach the membership draw ...
+        got = sorted(
+            r.doc_id for r in lsmp.mixture_sample(df, weights, domain_col="src").collect()
+        )
+        oracle = sorted(
+            r[0]
+            for r in con.execute(
+                lsmp.mixture_sample_sql(weights, domain_expr="src", cols="doc_id")
+            ).fetchall()
+        )
+        assert got == oracle
+        # ... and the random token totals the report at MIXTURE_WEIGHTS
+        got = [tuple(map(str, r)) for r in lsmp.mixture_report(df, "n_tokens").collect()]
         oracle = [
             tuple(map(str, r))
-            for r in con.execute(
-                lsmp.mixture_report_sql(
-                    weights,
-                    domain_expr="domain",
-                    tokens_expr="n_tok",
-                )
-            ).fetchall()
+            for r in con.execute(lsmp.mixture_report_sql("n_tokens")).fetchall()
         ]
         assert got == oracle
 

@@ -112,8 +112,8 @@ def test_empty_text_scores_instead_of_crashing(spark):
 
     df = spark.createDataFrame([("",), ("hi there!",)], "text string")
     rows = df.select(
-        ltx.punct_ratio("text").alias("p"),
-        ltx.quality_score("text").alias("q"),
+        ltx.punct_ratio().alias("p"),
+        ltx.quality_score().alias("q"),
     ).collect()
     assert rows[0].p == 0.0 and rows[0].q is not None
     assert 0.0 <= rows[1].p <= 1.0

@@ -31,7 +31,7 @@ def _frames(spark):
             (101, 1, _t(10, 45), _t(12)),  # contains pid 2; pid 1 excluded
             (102, 2, _t(9), _t(23)),  # long span, contains pid 4
         ],
-        "iid long, user_id long, start timestamp, end timestamp",
+        "iid long, user_id long, win_start timestamp, win_end timestamp",
     )
     return points, intervals
 
@@ -40,7 +40,7 @@ def test_containment_and_key_scoping(spark):
     points, intervals = _frames(spark)
     got = {
         (r.pid, r.iid)
-        for r in range_join(points, intervals, by="user_id").collect()
+        for r in range_join(points, intervals).collect()
     }
     assert got == {(1, 100), (2, 101), (4, 102)}
 
@@ -53,18 +53,18 @@ def test_closed_bounds_and_multi_bucket_span(spark):
     )
     got = {
         (r.pid, r.iid)
-        for r in range_join(edge, intervals, by="user_id").collect()
+        for r in range_join(edge, intervals).collect()
     }
     assert (9, 100) in got and (10, 100) in got
-    # a 14h interval spans many 1h buckets yet each pair appears once
-    wide = range_join(points, intervals, by="user_id").collect()
+    # a 14h interval spans many 30-minute buckets yet each pair appears once
+    wide = range_join(points, intervals).collect()
     assert len(wide) == len({(r.pid, r.iid) for r in wide})
 
 
 def test_column_clash_raises(spark):
     points, _ = _frames(spark)
     with pytest.raises(ValueError, match="disjoint"):
-        range_join(points, points, by="user_id")
+        range_join(points, points)
 
 
 def test_matches_duckdb_inequality_join(spark, smoke_dir):
@@ -84,11 +84,9 @@ def test_matches_duckdb_inequality_join(spark, smoke_dir):
         (r.event_id, r.session_start)
         for r in range_join(
             errors,
-            sessions,
-            start="session_start",
-            end="last_ts",
-            by="user_id",
-            bucket_seconds=1800,
+            sessions.withColumn("win_start", F.col("session_start")).withColumn(
+                "win_end", F.col("last_ts")
+            ),
         ).collect()
     }
     con = duckdb.connect()

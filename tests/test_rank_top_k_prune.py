@@ -75,7 +75,7 @@ def test_prune_dispatch_pinned_both_ways(spark, tmp_path):
     bf = top_k_bruteforce(emb, q, k=3)
     assert has_salt_pass(bf)  # unbounded per-query scan: prune ON
 
-    ivf = top_k_ann_ivf(emb, q, k=3, n_cells=4, n_probe=2)
+    ivf = top_k_ann_ivf(emb, q)
     assert not has_salt_pass(ivf)  # candidates cell-bounded: prune OFF
 
     path = str(tmp_path / "ivfidx")
@@ -86,12 +86,15 @@ def test_prune_dispatch_pinned_both_ways(spark, tmp_path):
     # and the dial never changes results: bruteforce with prune off
     # equals bruteforce with prune on (exactness re-pinned end-to-end)
     got = sorted(map(tuple, ivf.collect()))
+    # the first IVF_PROBE (2) seed vectors as a two-cell quantizer:
+    # every cell probed
+    two_cells = spark.createDataFrame(
+        [(0, [1.0, 1.0, 1.0]), (1, [2.0, 2.0, 1.0])], "cell_id int, __c array<double>"
+    )
     want = sorted(
         map(
             tuple,
-            top_k_ann_ivf(emb, q, k=3, n_cells=4, n_probe=4).where(
-                F.lit(True)
-            ).collect(),
+            top_k_ann_ivf(emb, q, centroids=two_cells).where(F.lit(True)).collect(),
         )
     )
     assert {t[:2] for t in got} <= {t[:2] for t in want}

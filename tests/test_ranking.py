@@ -16,16 +16,16 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.ranki
 
 
 def _df(spark, rows):
-    return spark.createDataFrame(rows, "id LONG, k STRING, v DOUBLE")
+    return spark.createDataFrame(rows, "event_id LONG, event_type STRING, value DOUBLE")
 
 
 def _naive(df):
-    w = Window.partitionBy("k").orderBy(F.col("v").desc_nulls_last())
-    n = F.count("*").over(Window.partitionBy("k"))
+    w = Window.partitionBy("event_type").orderBy(F.col("value").desc_nulls_last())
+    n = F.count("*").over(Window.partitionBy("event_type"))
     return df.select(
-        "id",
-        "k",
-        "v",
+        "event_id",
+        "event_type",
+        "value",
         F.rank().over(w).alias("rnk"),
         F.dense_rank().over(w).alias("dense_rnk"),
         F.round(
@@ -36,7 +36,7 @@ def _naive(df):
 
 def _assert_matches_naive(spark, rows):
     df = _df(spark, rows)
-    got = sorted(map(tuple, distributed_rank(df, ["k"], "v").collect()))
+    got = sorted(map(tuple, distributed_rank(df).collect()))
     want = sorted(map(tuple, _naive(df).collect()))
     assert got == want
 
@@ -51,7 +51,7 @@ def test_matches_window_rank_with_heavy_ties(spark):
 
 def test_nulls_rank_last_as_one_tie_group(spark):
     rows = [(1, "a", 7.0), (2, "a", None), (3, "a", None), (4, "a", 1.0)]
-    out = {r.id: r for r in distributed_rank(_df(spark, rows), ["k"], "v").collect()}
+    out = {r.event_id: r for r in distributed_rank(_df(spark, rows)).collect()}
     assert out[1].rnk == 1 and out[4].rnk == 2
     assert out[2].rnk == out[3].rnk == 3
     assert out[2].dense_rnk == 3
@@ -59,7 +59,7 @@ def test_nulls_rank_last_as_one_tie_group(spark):
 
 
 def test_single_row_key_pct_rank_zero(spark):
-    out = distributed_rank(_df(spark, [(1, "solo", 4.0)]), ["k"], "v").collect()
+    out = distributed_rank(_df(spark, [(1, "solo", 4.0)])).collect()
     assert out[0].rnk == 1 and out[0].pct_rank == 0.0
 
 
@@ -69,7 +69,7 @@ def test_no_full_data_window_in_plan(spark):
     show the window ABOVE an aggregate, and joining back must not
     re-sort the full input per key."""
     df = _df(spark, [(i, "a", float(i % 3)) for i in range(30)])
-    plan = distributed_rank(df, ["k"], "v")._jdf.queryExecution().executedPlan().toString()
+    plan = distributed_rank(df)._jdf.queryExecution().executedPlan().toString()
     # window input is the aggregated counts -> an Aggregate appears
     # below the Window in the same subtree
     assert "Window" in plan and "HashAggregate" in plan

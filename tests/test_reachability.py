@@ -3,8 +3,10 @@
 ``NAME = ...`` assignment; dunders like ``__all__`` excepted) in the
 package must be reachable from code that is not a test — the entry
 module, ``bench.py``, ``scripts/``, ``perfbench/`` or the package's
-own module-level statements (imports and re-exports included) —
-through a chain of identifier references.
+own module-level statements — through a chain of identifier
+references.  Re-exports are not callers: a package ``__init__.py``
+that imports a name (and lists it in ``__all__``) does not keep it
+alive.
 A function or constant only a test reads is dead weight: delete it
 with its tests (or move a constant into the test that reads it), or
 wire it to an entry.
@@ -19,7 +21,8 @@ miss a dead function that shares its name with a live identifier; it
 never flags a reachable one.
 
 ``ALLOWED`` names the reference implementations a test compares the
-engine against; each carries the reason it stays."""
+engine against, and the reference's own flow no entry can run; each
+carries the reason it stays."""
 
 import ast
 import os
@@ -29,6 +32,11 @@ PKG = "yelp_review_data_analysis_using_big_data_technologies_spark"
 
 #: ``path::name`` → why a definition no entry reaches is kept.
 ALLOWED = {
+    f"{PKG}/plans/master_table.py::yelp_master_table": (
+        "the reference's own Yelp flow (scripts/etl.py), kept as the "
+        "reference port: the Yelp data is not in the repo, so no entry "
+        "runs it; test_master_table.py checks it on a Yelp-shaped fixture"
+    ),
     f"{PKG}/llm/dedup.py::simhash_words": (
         "brute-force oracle: test_llm.py::test_banded_recall_equals_"
         "bruteforce checks simhash_near_dup_pairs against all-pairs "
@@ -78,15 +86,27 @@ def _defined_names(node):
     return names
 
 
-def _unreachable():
-    """Sorted ``path::name`` of every package definition no chain of
-    references from non-test code reaches."""
-    defs, live = {}, set()
+def _read_sources():
+    """``path`` → source of every non-test Python file."""
+    out = {}
     for path in _sources():
         with open(os.path.join(ROOT, path)) as f:
-            tree = ast.parse(f.read())
+            out[path] = f.read()
+    return out
+
+
+def _unreachable(files=None):
+    """Sorted ``path::name`` of every package definition no chain of
+    references from non-test code (``files``: ``path`` → source,
+    default the repo's) reaches."""
+    defs, live = {}, set()
+    for path, src in (files or _read_sources()).items():
+        tree = ast.parse(src)
+        reexports = os.path.basename(path) == "__init__.py"
         for node in tree.body:
             names = _defined_names(node) if path.startswith(PKG + os.sep) else []
+            if reexports and isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
             if not names:
                 live.update(_identifiers(node))
             for name in names:
@@ -99,6 +119,17 @@ def _unreachable():
         for k in reached:
             live.update(defs.pop(k))
     return sorted(f"{path}::{name}" for path, name in defs)
+
+
+def test_reexports_are_not_callers():
+    planted = {
+        f"{PKG}/m/__init__.py": (
+            f"from {PKG}.m.core import f, g\n__all__ = ['f', 'g']\n"
+        ),
+        f"{PKG}/m/core.py": "def f():\n    return 1\ndef g():\n    return 2\n",
+        "scripts/cli.py": f"from {PKG}.m import g\ng()\n",
+    }
+    assert _unreachable(planted) == [f"{PKG}/m/core.py::f"]
 
 
 def test_every_package_definition_is_reachable():

@@ -14,12 +14,12 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.recon
 
 
 def _diff(spark, left_rows, right_rows, **kw):
-    schema = kw.pop("schema", "k int, a string, b double")
+    schema = kw.pop("schema", "o_orderkey int, a string, b double")
     left = spark.createDataFrame(left_rows, schema)
     right = spark.createDataFrame(right_rows, schema)
-    out = table_diff(left, right, kw.pop("key_cols", ["k"]), **kw)
+    out = table_diff(left, right)
     return sorted(
-        ((r.k, r.status) for r in out.collect()),
+        ((r.o_orderkey, r.status) for r in out.collect()),
         key=lambda t: (t[0] is None, t[0] if t[0] is not None else 0, t[1]),
     )
 
@@ -47,7 +47,7 @@ def test_null_shift_detected(spark):
     # (5.0, NULL) and (NULL, 5.0) hash identically and the shift
     # silently passes as 'unchanged' — the one corruption a backfill
     # promotion gate exists to catch
-    schema = "k int, a double, b double"
+    schema = "o_orderkey int, a double, b double"
     left = [(1, 5.0, None), (2, None, 7.0)]
     right = [(1, None, 5.0), (2, None, 7.0)]
     assert _diff(spark, left, right, schema=schema) == [
@@ -80,32 +80,30 @@ def test_null_keys_surfaced_not_joined(spark):
 
 
 def test_default_compare_cols_mismatch_raises(spark):
-    left = spark.createDataFrame([(1, "x")], "k int, a string")
-    right = spark.createDataFrame([(1, 2.0)], "k int, b double")
+    left = spark.createDataFrame([(1, "x")], "o_orderkey int, a string")
+    right = spark.createDataFrame([(1, 2.0)], "o_orderkey int, b double")
     with pytest.raises(ValueError, match="payload columns"):
-        table_diff(left, right, ["k"])
+        table_diff(left, right)
 
 
 def test_summary_counts(spark):
     left = spark.createDataFrame(
-        [(i, f"v{i}", float(i)) for i in range(10)], "k int, a string, b double"
+        [(i, f"v{i}", float(i)) for i in range(10)], "o_orderkey int, a string, b double"
     )
     right = spark.createDataFrame(
         [(i, f"v{i}" if i % 3 else "mut", float(i)) for i in range(2, 12)],
-        "k int, a string, b double",
+        "o_orderkey int, a string, b double",
     )
-    got = {r.status: r.n for r in diff_summary(left, right, ["k"]).collect()}
+    got = {r.status: r.n for r in diff_summary(left, right).collect()}
     # keys 0,1 removed; 10,11 added; of 2..9: i in {3,6,9} mutated on
     # the right ("mut") — i%3==0 → changed; note 0 was removed
     assert got == {"added": 2, "removed": 2, "changed": 3, "unchanged": 5}
 
 
 def test_validation(spark):
-    df = spark.createDataFrame([(1, "x")], "k int, a string")
-    with pytest.raises(ValueError, match="key_cols"):
-        table_diff(df, df, [])
+    df = spark.createDataFrame([(1,)], "o_orderkey int")
     with pytest.raises(ValueError, match="no payload column"):
-        table_diff(df, df, ["k", "a"])
+        table_diff(df, df)
 
 
 def test_partition_invariance(spark):
@@ -113,10 +111,10 @@ def test_partition_invariance(spark):
     right_rows = [(i, f"v{(i + (i % 3 == 0)) % 7}", float(i % 5)) for i in range(5, 45)]
     want = None
     for parts in (1, 3, 17):
-        left = spark.createDataFrame(left_rows, "k int, a string, b double").repartition(parts)
-        right = spark.createDataFrame(right_rows, "k int, a string, b double").repartition(parts)
+        left = spark.createDataFrame(left_rows, "o_orderkey int, a string, b double").repartition(parts)
+        right = spark.createDataFrame(right_rows, "o_orderkey int, a string, b double").repartition(parts)
         got = sorted(
-            (r.k, r.status) for r in table_diff(left, right, ["k"]).collect()
+            (r.o_orderkey, r.status) for r in table_diff(left, right).collect()
         )
         if want is None:
             want = got

@@ -1,7 +1,6 @@
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import (
-    anti_join,
     dedup,
     dedup_keyed_deterministic,
     drop_nulls,
@@ -9,8 +8,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relat
     equi_join,
     grouped_top_k,
     rename_columns,
-    semi_join,
-    top_k,
 )
 
 
@@ -36,9 +33,13 @@ def test_dedup_keyed_deterministic_picks_min_payload(spark):
 
 
 def test_duplicate_rows_diagnostic(spark):
-    df = _df(spark, [(1,), (1,), (2,)], "id int")
+    df = _df(
+        spark,
+        [(1, 1, "a"), (1, 1, "b"), (1, 2, "c"), (2, 1, "d")],
+        "l_orderkey int, l_linenumber int, v string",
+    )
     rows = duplicate_rows(df).collect()
-    assert [(r.id, r["count"]) for r in rows] == [(1, 2)]
+    assert [(r.l_orderkey, r.l_linenumber, r["count"]) for r in rows] == [(1, 1, 2)]
 
 
 def test_drop_nulls_any_column(spark):
@@ -50,8 +51,8 @@ def test_join_family(spark):
     left = _df(spark, [(1, "x"), (2, "y"), (3, "z")], "k int, lv string")
     right = _df(spark, [(1, "A"), (1, "B"), (2, "C")], "k int, rv string")
     assert equi_join(left, right, on="k").count() == 3  # fan-out on k=1
-    assert semi_join(left, right, on="k").count() == 2  # no fan-out
-    assert [r.k for r in anti_join(left, right, on="k").collect()] == [3]
+    assert equi_join(left, right, on="k", how="left_semi").count() == 2  # no fan-out
+    assert [r.k for r in equi_join(left, right, on="k", how="left_anti").collect()] == [3]
 
 
 def test_inner_join_drops_orphans(spark):
@@ -62,9 +63,8 @@ def test_inner_join_drops_orphans(spark):
     assert [r.review_id for r in joined.collect()] == ["r1"]
 
 
-def test_top_k_and_grouped_top_k(spark):
+def test_grouped_top_k(spark):
     df = _df(spark, [("a", 3), ("a", 1), ("b", 5), ("b", 2)], "g string, v int")
-    assert [r.v for r in top_k(df, [F.desc("v")], 2).collect()] == [5, 3]
     out = grouped_top_k(df, ["g"], [F.desc("v")], 1)
     assert {(r.g, r.v) for r in out.collect()} == {("a", 3), ("b", 5)}
 
@@ -74,14 +74,14 @@ def test_latest_by_keeps_greatest_and_breaks_ties(spark):
 
     df = spark.createDataFrame(
         [
-            (1, 10, "old"),
-            (1, 20, "new"),
-            (2, 5, "a"),
-            (2, 5, "b"),  # tie on order col -> greatest payload wins
+            (1, 10, 0, "old"),
+            (1, 20, 0, "new"),
+            (2, 5, 0, "a"),
+            (2, 5, 0, "b"),  # tie on order cols -> greatest payload wins
         ],
-        "k long, v long, payload string",
+        "user_id long, ts long, event_id long, payload string",
     )
-    out = {r.k: (r.v, r.payload) for r in latest_by(df, ["k"], ["v"]).collect()}
+    out = {r.user_id: (r.ts, r.payload) for r in latest_by(df).collect()}
     assert out == {1: (20, "new"), 2: (5, "b")}
 
 
@@ -119,16 +119,16 @@ class TestScd2Intervals:
 
         df = spark.createDataFrame(
             [
-                (1, "2024-01-01 00:00:00", "a"),
-                (1, "2024-01-02 00:00:00", "b"),
-                (1, "2024-01-03 00:00:00", "c"),
-                (2, "2024-01-05 00:00:00", "x"),
+                (1, "2024-01-01 00:00:00", 1, "a", 0.0),
+                (1, "2024-01-02 00:00:00", 2, "b", 0.0),
+                (1, "2024-01-03 00:00:00", 3, "c", 0.0),
+                (2, "2024-01-05 00:00:00", 4, "x", 0.0),
             ],
-            "k long, ts string, v string",
+            "user_id long, ts string, event_id long, event_type string, value double",
         ).withColumn("ts", F.to_timestamp("ts"))
         rows = sorted(
-            scd2_intervals(df, keys=["k"], ts_col="ts").collect(),
-            key=lambda r: (r.k, r.valid_from),
+            scd2_intervals(df).collect(),
+            key=lambda r: (r.user_id, r.valid_from),
         )
         # chained: each version's valid_to equals the next valid_from
         assert rows[0].valid_to == rows[1].valid_from
@@ -142,17 +142,12 @@ class TestScd2Intervals:
         from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import scd2_intervals
 
         df = spark.createDataFrame(
-            [(1, "2024-01-01 00:00:00", 2, "late"),
-             (1, "2024-01-01 00:00:00", 1, "early")],
-            "k long, ts string, eid long, v string",
+            [(1, "2024-01-01 00:00:00", 2, "late", 0.0),
+             (1, "2024-01-01 00:00:00", 1, "early", 0.0)],
+            "user_id long, ts string, event_id long, event_type string, value double",
         ).withColumn("ts", F.to_timestamp("ts"))
-        rows = {
-            r.eid: r
-            for r in scd2_intervals(
-                df, keys=["k"], ts_col="ts", tiebreak=["eid"]
-            ).collect()
-        }
-        assert rows[1].valid_to == rows[2].valid_from  # eid asc order
+        rows = {r.event_id: r for r in scd2_intervals(df).collect()}
+        assert rows[1].valid_to == rows[2].valid_from  # event_id asc order
         assert rows[2].is_current and not rows[1].is_current
 
 
@@ -184,11 +179,11 @@ class TestConstraintChecks:
                     accepted_values_violations(
                         child, "v", ["a", "b", "c"], "av"
                     ),
-                    not_null_violations(child, "k", "nn"),
+                    not_null_violations(child.withColumnRenamed("k", "c_name")),
                 ]
             ).collect()
         }
-        assert rep == {"u": 2, "fk": 1, "av": 1, "nn": 1}
+        assert rep == {"u": 2, "fk": 1, "av": 1, "not_null:customer.c_name": 1}
 
     def test_clean_table_reports_zeroes(self, spark):
         from yelp_review_data_analysis_using_big_data_technologies_spark.operators.constraints import (

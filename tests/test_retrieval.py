@@ -88,7 +88,7 @@ def test_rrf_fusion_properties(spark):
     )
     got = {
         r.doc_id: (r.rrf_score, r.n_lists)
-        for r in rrf_fuse([lex, vec], rrf_k=60).collect()
+        for r in rrf_fuse([lex, vec]).collect()
     }
     want = {
         1: (round(1 / 61 + 1 / 63, 6), 2),
@@ -101,17 +101,15 @@ def test_rrf_fusion_properties(spark):
     assert got[1][0] > got[2][0] and got[3][0] > got[4][0]
     with pytest.raises(ValueError, match="rankings"):
         rrf_fuse([])
-    with pytest.raises(ValueError, match="rrf_k"):
-        rrf_fuse([lex], rrf_k=0)
 
 
 # -------------------------------------------- pseudo-relevance feedback
 
 
 def _prf_corpus(spark):
-    # "spark" retrieves docs 1-3; their dominant co-term is "shuffle",
-    # which doc 5 (no "spark" at all) is full of — a query for "spark"
-    # should pull doc 5 in only AFTER expansion
+    # BM25_QUERY ("spark", "vector", "merge") retrieves docs 1-3; their
+    # dominant co-term is "shuffle", which doc 5 (no query term at all)
+    # is full of — the query should pull doc 5 in only AFTER expansion
     return spark.createDataFrame(
         [
             (1, "spark shuffle engine with shuffle stages"),
@@ -127,9 +125,7 @@ def _prf_corpus(spark):
 def test_prf_expansion_nominates_feedback_coterm(spark):
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.terms import prf_expansion_terms
 
-    rows = prf_expansion_terms(
-        _prf_corpus(spark), ("spark",), feedback_k=3, expand_m=2
-    ).collect()
+    rows = prf_expansion_terms(_prf_corpus(spark)).collect()
     terms = [r.term for r in rows]
     assert terms[0] == "shuffle"  # the dominant feedback co-term wins
     assert "spark" not in terms  # original query terms never re-nominated
@@ -140,25 +136,16 @@ def test_prf_expansion_nominates_feedback_coterm(spark):
 
 
 def test_prf_requery_recalls_expansion_only_doc(spark):
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.terms import bm25_prf_topk, bm25_topk
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.terms import (
+        BM25_QUERY,
+        bm25_prf_topk,
+        bm25_topk,
+    )
 
     corpus = _prf_corpus(spark)
-    plain = {r.doc_id for r in bm25_topk(corpus, ("spark",), k=5).collect()}
+    plain = {r.doc_id for r in bm25_topk(corpus, BM25_QUERY, k=5).collect()}
     assert 5 not in plain  # no lexical match without expansion
-    prf = {
-        r.doc_id
-        for r in bm25_prf_topk(
-            corpus, ("spark",), k=5, feedback_k=3, expand_m=1
-        ).collect()
-    }
+    prf = {r.doc_id for r in bm25_prf_topk(corpus, k=5).collect()}
     assert 5 in prf  # the expansion term recalls it
     assert plain <= prf
 
-
-def test_prf_validation(spark):
-    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.terms import prf_expansion_terms
-
-    with pytest.raises(ValueError):
-        prf_expansion_terms(_prf_corpus(spark), ("spark",), feedback_k=0)
-    with pytest.raises(ValueError):
-        prf_expansion_terms(_prf_corpus(spark), ("spark",), expand_m=0)

@@ -136,28 +136,27 @@ def test_stream_merge_to_parquet_dedupes_across_batches(spark, tmp_path):
     table = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
     t0 = dt.datetime(2024, 1, 1)
+    t1 = dt.datetime(2024, 1, 2)
+    schema = "user_id long, event_type string, ts timestamp, payload string"
     spark.createDataFrame(
-        [(1, 1995, t0, "v1"), (2, 1996, t0, "v1")],
-        "id long, y int, ts timestamp, payload string",
+        [(1, "a", t0, "v1"), (2, "b", t0, "v1")], schema
     ).write.mode("append").parquet(src)
 
     def run_once():
-        stream = spark.readStream.schema(
-            "id long, y int, ts timestamp, payload string"
-        ).parquet(src)
-        stream_merge_to_parquet(
-            stream, table, ckpt, keys=["id"], partition_by=["y"]
-        )
+        stream = spark.readStream.schema(schema).parquet(src)
+        stream_merge_to_parquet(stream, table, ckpt)
 
     run_once()
-    # second wave: id=2 updated, id=3 new
+    # second wave: user 2 updated (a newer version), user 3 new
     spark.createDataFrame(
-        [(2, 1996, t0, "v2"), (3, 1996, t0, "v1")],
-        "id long, y int, ts timestamp, payload string",
+        [(2, "b", t1, "v2"), (3, "b", t0, "v1")], schema
     ).write.mode("append").parquet(src)
     run_once()
-    got = {(r.id, r.y): r.payload for r in spark.read.parquet(table).collect()}
-    assert got == {(1, 1995): "v1", (2, 1996): "v2", (3, 1996): "v1"}
+    got = {
+        (r.user_id, r.event_type): r.payload
+        for r in spark.read.parquet(table).collect()
+    }
+    assert got == {(1, "a"): "v1", (2, "b"): "v2", (3, "b"): "v1"}
 
 
 def test_max_files_per_trigger_bounds_micro_batches(spark, tmp_path):
@@ -202,21 +201,19 @@ def test_stream_increment_counts_adds_partials_across_batches(spark, tmp_path):
     table = str(tmp_path / "inc_table")
     ckpt = str(tmp_path / "inc_ckpt")
     spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("b", 10.0)], "k string, v double"
+        [("a", 1.0), ("a", 2.0), ("b", 10.0)], "event_type string, value double"
     ).write.mode("append").parquet(src)
 
     def run_once():
-        stream = spark.readStream.schema("k string, v double").parquet(src)
-        stream_increment_counts_to_parquet(
-            stream, table, ckpt, keys=["k"], sum_col="s", sum_src="v"
-        )
+        stream = spark.readStream.schema("event_type string, value double").parquet(src)
+        stream_increment_counts_to_parquet(stream, table, ckpt)
 
     run_once()
     spark.createDataFrame(
-        [("a", 4.0), ("c", 100.0)], "k string, v double"
+        [("a", 4.0), ("c", 100.0)], "event_type string, value double"
     ).write.mode("append").parquet(src)
     run_once()
-    got = {r.k: (r.n, r.s) for r in spark.read.parquet(table).collect()}
+    got = {r.event_type: (r.n, r.s) for r in spark.read.parquet(table).collect()}
     assert got == {"a": (3, 7.0), "b": (1, 10.0), "c": (1, 100.0)}
 
 
@@ -235,50 +232,38 @@ def test_stream_increment_counts_partition_pruned_rewrite(spark, tmp_path):
     src = str(tmp_path / "pinc_src")
     table = str(tmp_path / "pinc_table")
     ckpt = str(tmp_path / "pinc_ckpt")
+    schema = "event_type string, value double"
     spark.createDataFrame(
-        [(1995, "a", 1.0), (1995, "a", 2.0), (1996, "b", 10.0)],
-        "y int, k string, v double",
+        [("a", 1.0), ("a", 2.0), ("b", 10.0)], schema
     ).write.mode("append").parquet(src)
 
     def run_once():
-        stream = spark.readStream.schema("y int, k string, v double").parquet(src)
-        stream_increment_counts_to_parquet(
-            stream,
-            table,
-            ckpt,
-            keys=["y", "k"],
-            sum_col="s",
-            sum_src="v",
-            partition_by=["y"],
-        )
+        stream = spark.readStream.schema(schema).parquet(src)
+        stream_increment_counts_to_parquet(stream, table, ckpt)
 
     run_once()
 
-    def snapshot(year: int) -> dict[str, tuple[int, float]]:
-        files = glob.glob(os.path.join(table, f"y={year}", "*.parquet"))
+    def snapshot(key: str) -> dict[str, tuple[int, float]]:
+        files = glob.glob(os.path.join(table, f"event_type={key}", "*.parquet"))
         return {
             f: (os.path.getsize(f), os.path.getmtime(f)) for f in files
         }
 
-    before_95, before_96 = snapshot(1995), snapshot(1996)
-    assert before_95 and before_96
-    # second wave touches ONLY y=1996
+    before_a, before_b = snapshot("a"), snapshot("b")
+    assert before_a and before_b
+    # second wave touches ONLY event_type b (and the new c)
     spark.createDataFrame(
-        [(1996, "b", 5.0), (1996, "c", 100.0)], "y int, k string, v double"
+        [("b", 5.0), ("c", 100.0)], schema
     ).write.mode("append").parquet(src)
     run_once()
     # untouched partition: identical file set, sizes, and mtimes
-    assert snapshot(1995) == before_95
+    assert snapshot("a") == before_a
     # touched partition: rewritten
-    assert snapshot(1996) != before_96
+    assert snapshot("b") != before_b
     got = {
-        (r.y, r.k): (r.n, r.s) for r in spark.read.parquet(table).collect()
+        r.event_type: (r.n, r.s) for r in spark.read.parquet(table).collect()
     }
-    assert got == {
-        (1995, "a"): (2, 3.0),
-        (1996, "b"): (2, 15.0),
-        (1996, "c"): (1, 100.0),
-    }
+    assert got == {"a": (2, 3.0), "b": (2, 15.0), "c": (1, 100.0)}
 
 
 def test_merge_sinks_distinguish_missing_from_unreadable(spark, tmp_path):
@@ -310,13 +295,11 @@ def test_merge_sinks_distinguish_missing_from_unreadable(spark, tmp_path):
     assert hadoop_table_exists(spark, str(corrupt))
 
     src = str(tmp_path / "src")
-    schema = "k long, y int, v string"
-    spark.createDataFrame([(1, 1, "a")], schema).write.parquet(src)
+    schema = "user_id long, event_type string, ts long, v string"
+    spark.createDataFrame([(1, "1", 1, "a")], schema).write.parquet(src)
     stream = spark.readStream.schema(schema).parquet(src)
     with pytest.raises(Exception):
-        stream_merge_to_parquet(
-            stream, str(corrupt), str(tmp_path / "ckpt"), keys=["k"], partition_by=["y"]
-        )
+        stream_merge_to_parquet(stream, str(corrupt), str(tmp_path / "ckpt"))
     # nothing bootstrapped over the unreadable table
     assert part.read_bytes() == b"not a parquet file"
 
@@ -603,28 +586,24 @@ def test_stream_increment_counts_partial_commit_replay(spark, tmp_path):
     src = str(tmp_path / "pc_src")
     table = str(tmp_path / "pc_table")
     spark.createDataFrame(
-        [("a", 1, 1.0), ("a", 1, 2.0), ("b", 2, 10.0)],
-        "k string, d int, v double",
+        [("a", 1.0), ("a", 2.0), ("b", 10.0)],
+        "event_type string, value double",
     ).write.mode("append").parquet(src)
 
     def run(ckpt):
-        stream = spark.readStream.schema("k string, d int, v double").parquet(
+        stream = spark.readStream.schema("event_type string, value double").parquet(
             src
         )
-        stream_increment_counts_to_parquet(
-            stream, table, ckpt,
-            keys=["k", "d"], sum_col="s", sum_src="v",
-            partition_by=["d"],
-        )
+        stream_increment_counts_to_parquet(stream, table, ckpt)
 
     run(str(tmp_path / "pc_ckpt1"))
-    # crash simulation: partition d=2's overwrite never committed
-    shutil.rmtree(f"{table}/d=2")
+    # crash simulation: partition event_type=b's overwrite never committed
+    shutil.rmtree(f"{table}/event_type=b")
     # full replay of batch 0 (fresh checkpoint)
     run(str(tmp_path / "pc_ckpt2"))
-    got = {(r.k, r.d): (r.n, r.s) for r in spark.read.parquet(table).collect()}
-    # d=1 untouched by the replay (not double-added); d=2 restored
-    assert got == {("a", 1): (2, 3.0), ("b", 2): (1, 10.0)}
+    got = {r.event_type: (r.n, r.s) for r in spark.read.parquet(table).collect()}
+    # a untouched by the replay (not double-added); b restored
+    assert got == {"a": (2, 3.0), "b": (1, 10.0)}
 
 
 def test_stream_increment_counts_numeric_shaped_string_partition(spark, tmp_path):
@@ -632,7 +611,7 @@ def test_stream_increment_counts_numeric_shaped_string_partition(spark, tmp_path
     (r5 ADVICE): "01" round-trips through the directory name as
     inferred int 1, so the raw tuple compare never matched the 'done'
     set — a replayed batch double-added its partials and the rewrite
-    landed in a second directory (d=1 beside d=01).  The sink now
+    landed in a second directory (event_type=1 beside event_type=01).  The sink now
     reads the view with partition-type inference off and casts to the
     batch frame's own dtypes."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.joins import (
@@ -642,17 +621,13 @@ def test_stream_increment_counts_numeric_shaped_string_partition(spark, tmp_path
     src = str(tmp_path / "ns_src")
     table = str(tmp_path / "ns_table")
     spark.createDataFrame(
-        [("a", "01", 1.0), ("a", "01", 2.0), ("b", "2", 10.0)],
-        "k string, d string, v double",
+        [("01", 1.0), ("01", 2.0), ("2", 10.0)],
+        "event_type string, value double",
     ).write.mode("append").parquet(src)
 
     def run(ckpt):
-        stream = spark.readStream.schema("k string, d string, v double").parquet(src)
-        stream_increment_counts_to_parquet(
-            stream, table, ckpt,
-            keys=["k", "d"], sum_col="s", sum_src="v",
-            partition_by=["d"],
-        )
+        stream = spark.readStream.schema("event_type string, value double").parquet(src)
+        stream_increment_counts_to_parquet(stream, table, ckpt)
 
     run(str(tmp_path / "ns_ckpt1"))
     # full replay of batch 0 (fresh checkpoint): every partition is
@@ -661,10 +636,10 @@ def test_stream_increment_counts_numeric_shaped_string_partition(spark, tmp_path
     import glob as _glob
     dirs = sorted(
         p.rsplit("/", 1)[1]
-        for p in _glob.glob(f"{table}/d=*")
+        for p in _glob.glob(f"{table}/event_type=*")
     )
-    assert dirs == ["d=01", "d=2"], dirs  # no stray d=1 directory
-    # read back with inference off so d keeps its written string form
+    assert dirs == ["event_type=01", "event_type=2"], dirs  # no stray event_type=1
+    # read back with inference off so event_type keeps its written string form
     prev = spark.conf.get(
         "spark.sql.sources.partitionColumnTypeInference.enabled", "true"
     )
@@ -673,14 +648,14 @@ def test_stream_increment_counts_numeric_shaped_string_partition(spark, tmp_path
     )
     try:
         got = {
-            (r.k, r.d): (r.n, r.s)
+            r.event_type: (r.n, r.s)
             for r in spark.read.parquet(table).collect()
         }
     finally:
         spark.conf.set(
             "spark.sql.sources.partitionColumnTypeInference.enabled", prev
         )
-    assert got == {("a", "01"): (2, 3.0), ("b", "2"): (1, 10.0)}
+    assert got == {"01": (2, 3.0), "2": (1, 10.0)}
 
 
 def test_stream_line_dedup_sequential_lines(spark, tmp_path):

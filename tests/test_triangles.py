@@ -107,14 +107,14 @@ def test_cross_corpus_join_matches_self_join_on_split(spark):
     )
     all_pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(df, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(df).collect()
     }
     release_staging()
     left = df.where("doc_id % 2 = 0")
     right = df.where("doc_id % 2 = 1")
     got = {
         (r.id_l, r.id_r): r.jaccard
-        for r in ngram_jaccard_join(left, right, threshold=0.5).collect()
+        for r in ngram_jaccard_join(left, right).collect()
     }
     release_staging()
     want = {
@@ -144,7 +144,6 @@ def test_cross_corpus_join_twin_agrees(spark, tmp_path):
     sql = ngram_jaccard_join_sql(
         "(SELECT * FROM documents WHERE doc_id % 2 = 0)",
         "(SELECT * FROM documents WHERE doc_id % 2 = 1)",
-        threshold=0.3,
     )
     want = sorted(tuple(r) for r in con.execute(sql).fetchall())
     got = sorted(
@@ -152,7 +151,6 @@ def test_cross_corpus_join_twin_agrees(spark, tmp_path):
         for r in ngram_jaccard_join(
             df.where("doc_id % 2 = 0"),
             df.where("doc_id % 2 = 1"),
-            threshold=0.3,
         ).collect()
     )
     release_staging()

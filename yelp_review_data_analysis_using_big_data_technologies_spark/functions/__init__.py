@@ -6,7 +6,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.functions.casem
     sentiment,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.functions.dateparts import (
-    date_parts,
     day_name,
     to_date_col,
 )
@@ -14,7 +13,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.functions.datep
 __all__ = [
     "SUPER_CATEGORIES",
     "bucketize",
-    "date_parts",
     "day_name",
     "decode_map",
     "first_match_category",

@@ -68,10 +68,11 @@ def first_match_category(
     return expr.otherwise(F.lit("Other"))
 
 
-def sentiment(stars: Column | str) -> Column:
-    """Sentiment bucketing CASE (C1; reference scripts/etl.py:96-101):
-    stars <= 2 → negative, == 3 → neutral, else positive."""
-    c = F.col(stars) if isinstance(stars, str) else stars
+def sentiment() -> Column:
+    """Sentiment bucketing CASE over ``stars`` (C1; reference
+    scripts/etl.py:96-101): stars <= 2 → negative, == 3 → neutral,
+    else positive."""
+    c = F.col("stars")
     return (
         F.when(c <= F.lit(2.0), F.lit("negative"))
         .when(c == F.lit(3.0), F.lit("neutral"))
@@ -82,11 +83,10 @@ def sentiment(stars: Column | str) -> Column:
 def bucketize(
     col: Column | str,
     thresholds: Sequence[tuple[float, str]],
-    default: str,
 ) -> Column:
     """Generalized ordered bucketing: first threshold with
     ``col <= bound`` wins; NULL input falls through every branch to
-    ``default``.  NOT interchangeable with ``sentiment``, whose
+    ``"high"``.  NOT interchangeable with ``sentiment``, whose
     neutral band is a strict EQUALITY (== 3) and whose else-branch
     therefore also catches the open interval (2, 3) and NULL —
     reference semantics (scripts/etl.py:96-99) this interval bucketing
@@ -100,7 +100,7 @@ def bucketize(
             if expr is None
             else expr.when(branch, F.lit(label))
         )
-    return F.lit(default) if expr is None else expr.otherwise(F.lit(default))
+    return F.lit("high") if expr is None else expr.otherwise(F.lit("high"))
 
 
 def decode_map(col: Column | str, mapping: Mapping[str, str]) -> Column:

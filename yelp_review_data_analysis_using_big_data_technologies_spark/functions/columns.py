@@ -11,13 +11,3 @@ def as_col(value: Column | str) -> Column:
     name-or-expression operator signature in this package needs (one
     definition; modules import it instead of keeping private copies)."""
     return F.col(value) if isinstance(value, str) else value
-
-
-def cols_list(value) -> list:
-    """Accept one column name or a sequence of names; return a list —
-    the key-list coercion shared by the join-family operator
-    signatures (asof/interpolate/range/salted joins).  ``None`` means
-    no keys (empty list)."""
-    if value is None:
-        return []
-    return [value] if isinstance(value, str) else list(value)

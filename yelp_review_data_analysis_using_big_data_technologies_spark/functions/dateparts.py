@@ -28,20 +28,7 @@ def to_date_col(col: Column | str) -> Column:
     return F.try_to_date(c)
 
 
-def date_parts(col: Column | str) -> dict[str, Column]:
-    """C4 — the full date-part family the dashboard slices on."""
-    c = _as_col(col)
-    return {
-        "year": F.year(c),
-        "month": F.month(c),
-        "day": F.dayofmonth(c),
-        "quarter": F.quarter(c),
-        "week": F.weekofyear(c),
-        "dayofweek": F.dayofweek(c),
-    }
-
-
-def day_name(col: Column | str) -> Column:
-    """Full weekday name ("Sunday"), dashboard Q5.  DuckDB twin:
-    ``dayname(col)``."""
-    return F.date_format(_as_col(col), "EEEE")
+def day_name() -> Column:
+    """Full weekday name ("Sunday") of ``o_orderdate``, dashboard Q5.
+    DuckDB twin: ``dayname(o_orderdate)``."""
+    return F.date_format(F.col("o_orderdate"), "EEEE")

@@ -27,7 +27,7 @@ sides are the corpus, so the join must shuffle on the shingle; here
 the asymmetry (tiny benchmark) turns the same inverted-index idea
 into a broadcast map-side filter.
 
-The DuckDB twin (:func:`decontaminate_sql`) runs the identical
+The DuckDB twin (:func:`contamination_overlap_sql`) runs the identical
 shingling and overlap arithmetic, so the driver hash-checks it.
 """
 
@@ -113,12 +113,3 @@ GROUP BY doc_id
 HAVING count(*) >= 2
 """
 
-
-def decontaminate_sql(corpus_where: str, benchmark_where: str) -> str:
-    """DuckDB twin of :func:`contamination_overlap` with corpus and
-    benchmark carved out of ``documents`` by the two WHERE predicates
-    (how the driver entry derives a deterministic benchmark set)."""
-    return contamination_overlap_sql(
-        f"(SELECT * FROM documents WHERE {corpus_where})",
-        f"(SELECT * FROM documents WHERE {benchmark_where})",
-    )

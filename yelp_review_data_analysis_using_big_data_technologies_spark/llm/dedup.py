@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import spread, stage
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.text import (
+    NUM_HASHES,
     minhash_signature_from,
     tokens,
     shingled,
@@ -48,10 +49,10 @@ _HEX = "0123456789abcdef"
 SIMHASH_BITS = 16
 
 #: The banded MinHash LSH shape every registered near-dup entry and
-#: its DuckDB twin run: word 3-gram shingles, 6 hashes in 3 bands of
-#: 2 rows, pairs kept at exact Jaccard >= 0.5.
+#: its DuckDB twin run: word 3-gram shingles, ``llm.text``'s
+#: ``NUM_HASHES`` (6) hashes in 3 bands of 2 rows, pairs kept at exact
+#: Jaccard >= 0.5.
 SHINGLE_N = 3
-NUM_HASHES = 6
 BANDS = 3
 THRESHOLD = 0.5
 
@@ -59,16 +60,19 @@ THRESHOLD = 0.5
 #: in more documents than this are boilerplate and are dropped.
 MAX_DF = 1000
 
+#: Jaccard cut of the exact n-gram joins (:func:`ngram_jaccard_pairs`,
+#: :func:`ngram_jaccard_join`) and their DuckDB twins.
+NGRAM_THRESHOLD = 0.3
+
 #: Band-bucket population above which :func:`band_bucket_profile`
 #: (and its twin) reports a bucket as an oversize near-dup clique.
 OVERSIZE_BUCKET = 1000
 
 
-def content_hash(text: Column | str) -> Column:
+def content_hash() -> Column:
     """Stable content key: ``sha2(text, 256)`` (lowercase hex in both
     Spark and DuckDB)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.sha2(c, 256)
+    return F.sha2(F.col("text"), 256)
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -76,21 +80,20 @@ def exact_dedup(df: DataFrame) -> DataFrame:
     by ``sha2(text)``, survivor = minimal ``doc_id`` (deterministic,
     oracle-checkable).  At 100 TB this shuffles one 64-char key plus
     the surviving row per group — never the full corpus width twice."""
-    hashed = df.withColumn("content_hash", content_hash("text"))
+    hashed = df.withColumn("content_hash", content_hash())
     return dedup_keyed_deterministic(
         hashed, keys=["content_hash"], tiebreak=["doc_id"]
     )
 
 
-def band_key_array(sig_col, num_hashes: int, bands: int):
-    """The ``bands`` LSH bucket keys derived from a MinHash signature
-    array column, as one array expression — THE shared definition of
+def band_key_array(sig_col):
+    """The ``BANDS`` LSH bucket keys derived from a ``NUM_HASHES``-wide
+    MinHash signature array column, as one array expression — THE shared definition of
     how a signature becomes band keys (the self-join staging, the
     delta-vs-corpus join, and the streaming ingest's persisted index
     all call this; a band-layout change cannot silently diverge
     them)."""
-    rows = num_hashes // bands
-    assert rows * bands == num_hashes, "bands must divide num_hashes"
+    rows = NUM_HASHES // BANDS
     return F.array(
         *[
             F.concat_ws(
@@ -98,7 +101,7 @@ def band_key_array(sig_col, num_hashes: int, bands: int):
                 F.lit(str(b)),
                 *[sig_col[b * rows + r] for r in range(rows)],
             )
-            for b in range(bands)
+            for b in range(BANDS)
         ]
     )
 
@@ -137,13 +140,13 @@ def _banded_keys(df: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.array_distinct(F.col("__sh0")).alias("__sh"),
         )
         .filter(F.size("__sh") > 0)
-        .withColumn("__sig", minhash_signature_from(F.col("__sh"), NUM_HASHES))
+        .withColumn("__sig", minhash_signature_from(F.col("__sh")))
         .withColumn("__sz", F.size("__sh"))
     )
     band_keys = base.select(
         "__id",
         F.explode(
-            band_key_array(F.col("__sig"), NUM_HASHES, BANDS)
+            band_key_array(F.col("__sig"))
         ).alias("band_key"),
     )
     return base, band_keys
@@ -182,16 +185,15 @@ def near_dup_pairs_banded(df: DataFrame) -> DataFrame:
     # references the staged relation three times (band explode + both
     # verification sides); at warehouse scale it's a staging table.
     base, band_keys = _banded_keys(df)
-    return verified_pairs_from(base, band_keys, THRESHOLD)
+    return verified_pairs_from(base, band_keys)
 
 
-def verified_pairs_from(
-    base: DataFrame, band_keys: DataFrame, threshold: float
-) -> DataFrame:
+def verified_pairs_from(base: DataFrame, band_keys: DataFrame) -> DataFrame:
     """Band-bucket self-join + exact-Jaccard verification over
     PREBUILT features: ``base`` carries ``(__id, __sh, __sz)``,
     ``band_keys`` carries ``(__id, band_key)`` exploded.  Returns
-    ``(id_a, id_b, jaccard)`` with ``id_a < id_b`` — the verification
+    ``(id_a, id_b, jaccard)`` with ``id_a < id_b`` and Jaccard ≥
+    ``THRESHOLD`` — the verification
     tail shared by :func:`near_dup_pairs_banded` and the streaming
     doc-dedup ingest's intra-batch pass (which already holds features
     and must not rebuild them)."""
@@ -226,7 +228,7 @@ def verified_pairs_from(
         .withColumn(
             "jaccard", jaccard_rounded("sh_a", "sz_a", "sh_b", "sz_b")
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
     return verified
@@ -250,7 +252,7 @@ def dedup_against_corpus(corpus: DataFrame, delta: DataFrame) -> DataFrame:
     as in the self-join case.  Both checks are independent
     conjunctions, so the oracle can express them against the
     full-table pair set restricted to cross pairs."""
-    dh = content_hash("text")
+    dh = content_hash()
     corpus_hashes = corpus.select(dh.alias("__h")).distinct()
     exact_ok = (
         delta.withColumn("__h", dh)
@@ -260,9 +262,7 @@ def dedup_against_corpus(corpus: DataFrame, delta: DataFrame) -> DataFrame:
 
     cbase, ckeys = _banded_keys(corpus)
     dbase, dkeys = _banded_keys(delta)
-    matched = match_banded_candidates(
-        dbase, dkeys, cbase, ckeys, "doc_id", THRESHOLD
-    )
+    matched = match_banded_candidates(dbase, dkeys, cbase, ckeys)
     return exact_ok.join(matched, on="doc_id", how="left_anti")
 
 
@@ -271,11 +271,9 @@ def match_banded_candidates(
     dkeys: DataFrame,
     cbase: DataFrame,
     ckeys: DataFrame,
-    id_col: str,
-    threshold: float,
 ) -> DataFrame:
-    """Delta ids with ≥1 corpus candidate (shared band key) verifying
-    at Jaccard ≥ ``threshold`` — THE matched-candidates predicate,
+    """Delta ``doc_id`` values with ≥1 corpus candidate (shared band key)
+    verifying at Jaccard ≥ ``THRESHOLD`` — THE matched-candidates predicate,
     shared by :func:`dedup_against_corpus` and the cross-batch check
     of ``streaming.ingest.stream_doc_dedup_to_parquet`` so the two
     cannot silently diverge.
@@ -301,9 +299,9 @@ def match_banded_candidates(
             on="__cid",
         )
         .filter(
-            jaccard_rounded("sh_d", "sz_d", "sh_c", "sz_c") >= threshold
+            jaccard_rounded("sh_d", "sz_d", "sh_c", "sz_c") >= THRESHOLD
         )
-        .select(F.col("__did").alias(id_col))
+        .select(F.col("__did").alias("doc_id"))
         .distinct()
     )
 
@@ -320,7 +318,7 @@ def _jaccard_postings(df: DataFrame) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs via an inverted shingle
     index — the deterministic complement to the probabilistic MinHash
     band join.
@@ -378,12 +376,12 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
                 6,
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NGRAM_THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
 
 
-def ngram_jaccard_sql(threshold: float = 0.5) -> str:
+def ngram_jaccard_sql() -> str:
     """DuckDB twin of :func:`ngram_jaccard_pairs` (same shingling,
     same ``MAX_DF`` cut, same size bookkeeping)."""
     toks = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
@@ -410,19 +408,15 @@ SELECT id_a, id_b,
 FROM shared
 JOIN sizes sa ON sa.id = shared.id_a
 JOIN sizes sb ON sb.id = shared.id_b
-WHERE round(c * 1.0 / (sa.sz + sb.sz - c), 6) >= {threshold}
+WHERE round(c * 1.0 / (sa.sz + sb.sz - c), 6) >= {NGRAM_THRESHOLD}
 """
 
 
-def ngram_jaccard_join(
-    left: DataFrame,
-    right: DataFrame,
-    threshold: float = 0.5,
-) -> DataFrame:
+def ngram_jaccard_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """CROSS-CORPUS exact n-gram Jaccard join (the R-S form of
     :func:`ngram_jaccard_pairs`): pairs ``(id_l, id_r, jaccard)`` with
     ``id_l`` from ``left`` and ``id_r`` from ``right`` at Jaccard ≥
-    ``threshold`` — the audit surface for "which docs of the new crawl
+    ``NGRAM_THRESHOLD`` — the audit surface for "which docs of the new crawl
     near-duplicate which docs of the reference corpus" (admission
     decisions are :func:`dedup_against_corpus`; THIS returns the pairs
     themselves, with scores, for review/reporting).
@@ -474,16 +468,12 @@ def ngram_jaccard_join(
                 6,
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NGRAM_THRESHOLD)
         .select("id_l", "id_r", "jaccard")
     )
 
 
-def ngram_jaccard_join_sql(
-    left_rel: str,
-    right_rel: str,
-    threshold: float = 0.5,
-) -> str:
+def ngram_jaccard_join_sql(left_rel: str, right_rel: str) -> str:
     """DuckDB twin of :func:`ngram_jaccard_join` — ``left_rel`` /
     ``right_rel`` are table names or parenthesized subqueries."""
     toks = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
@@ -514,7 +504,7 @@ SELECT id_l, id_r,
 FROM shared
 JOIN szl ON szl.id = shared.id_l
 JOIN szr ON szr.id = shared.id_r
-WHERE round(c * 1.0 / (szl.sz + szr.sz - c), 6) >= {threshold}
+WHERE round(c * 1.0 / (szl.sz + szr.sz - c), 6) >= {NGRAM_THRESHOLD}
 """
 
 
@@ -546,11 +536,11 @@ def simhash_buckets(df: DataFrame) -> DataFrame:
     return hashed.groupBy("simhash").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
-def simhash_sql(text_expr: str) -> str:
+def simhash_sql() -> str:
     """DuckDB twin of the :func:`simhash_buckets` key (word 0 of
     :func:`simhash_words`) for oracle checks — generated from the same
     constants so both engines compute bit-for-bit the same value."""
-    tok = f"regexp_split_to_array({text_expr}, '[ \\t\\n\\x0B\\f\\r]+')"
+    tok = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
     digit = (
         lambda pos, w: f"(instr('{_HEX}', substr(md5(t), {pos}, 1)) - 1) * {w}"
     )
@@ -613,12 +603,12 @@ def simhash_words(text: Column | str) -> Column:
     return F.array(*words)
 
 
-def simhash_words_sql(text_expr: str) -> str:
+def simhash_words_sql() -> str:
     """DuckDB twin of :func:`simhash_words` — straightforward per-bit
     ``list_sum`` formulation (the oracle optimizes for obviousness, not
     speed), generated from the same constants so the words agree
     bit-for-bit."""
-    tok = f"regexp_split_to_array({text_expr}, '[ \\t\\n\\x0B\\f\\r]+')"
+    tok = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
     words = []
     for w in range(SIMHASH_WORDS):
         digit = (
@@ -756,7 +746,7 @@ def simhash_near_dup_pairs(df: DataFrame) -> DataFrame:
 def simhash_near_dup_sql() -> str:
     """DuckDB twin of :func:`simhash_near_dup_pairs` (same words, same
     bands, same Hamming verification, same NULL-doc exclusion)."""
-    words = simhash_words_sql("text")
+    words = simhash_words_sql()
     ham = " + ".join(
         f"bit_count(xor(ha.w[{i + 1}], hb.w[{i + 1}]))" for i in range(SIMHASH_WORDS)
     )

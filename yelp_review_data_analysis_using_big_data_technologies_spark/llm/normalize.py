@@ -43,20 +43,19 @@ def _nfc():
     return _norm
 
 
-def normalize_text(df: DataFrame, flag_col: str | None = None) -> DataFrame:
+def normalize_text(df: DataFrame) -> DataFrame:
     """Normalize ``df["text"]`` in place to NFC, the web's canonical
     form (the ingest contract: downstream sees only normalized bytes).
 
-    ``flag_col``, if given, adds a boolean marking rows the
-    normalization actually changed — the audit column an ingest job
-    writes so the (tiny) changed slice can be re-checked without
-    re-scanning the corpus.
+    Adds the boolean ``changed`` marking rows the normalization
+    actually changed — the audit column an ingest job writes so the
+    (tiny) changed slice can be re-checked without re-scanning the
+    corpus.
     """
     tmp = "__normalize_text_tmp"
     res = df.withColumn(tmp, _nfc()(F.col("text")))
-    if flag_col is not None:
-        # flag against the PRE-normalization bytes (null text → False)
-        res = res.withColumn(
-            flag_col, F.coalesce(F.col(tmp) != F.col("text"), F.lit(False))
-        )
+    # flag against the PRE-normalization bytes (null text → False)
+    res = res.withColumn(
+        "changed", F.coalesce(F.col(tmp) != F.col("text"), F.lit(False))
+    )
     return res.withColumn("text", F.col(tmp)).drop(tmp)

@@ -53,7 +53,7 @@ def pack_bins(
     contiguous rule above.
 
     ``tokens_col`` supplies a precomputed token count; otherwise
-    whitespace ``token_count("text")`` is used.  Returns
+    whitespace ``token_count()`` is used.  Returns
     ``(id, n_tokens, offset_tokens, bin_id)`` — all bigint.
 
     CONTRACT (r8, pinned in tests/test_dup_ids.py): NULL ids are NOT
@@ -68,7 +68,7 @@ def pack_bins(
     n = (
         F.col(tokens_col)
         if tokens_col is not None
-        else token_count("text")
+        else token_count()
     ).cast("bigint")
     d = docs.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col),

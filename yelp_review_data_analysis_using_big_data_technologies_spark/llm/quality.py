@@ -173,12 +173,22 @@ def redact_pii(df: DataFrame) -> DataFrame:
     )
 
 
-def redact_pii_sql(text_expr: str) -> tuple[str, str]:
+#: The text :func:`redact_pii_sql` redacts: ``documents.text`` with
+#: PII seeded from ``doc_id`` exactly as
+#: ``plans.llm_queries.doc_pii_redact`` appends it on the Spark side.
+_PII_SEEDED = (
+    "text || ' contact user' || CAST(doc_id AS VARCHAR) || "
+    "'@mail.example.com from 10.2.' || CAST(doc_id % 256 AS VARCHAR) || "
+    "'.7 call 555-123-4567'"
+)
+
+
+def redact_pii_sql() -> tuple[str, str]:
     """DuckDB twin pair for :func:`redact_pii`: returns
-    ``(clean_sql, count_sql)`` expression strings over ``text_expr``
-    (DuckDB needs the 'g' flag for replace-all; counts via
+    ``(clean_sql, count_sql)`` expression strings over the PII-seeded
+    text (DuckDB needs the 'g' flag for replace-all; counts via
     ``regexp_extract_all``)."""
-    clean = text_expr
+    text_expr = clean = _PII_SEEDED
     count_terms = []
     for _name, pat, repl in PII_PATTERNS:
         escaped = pat.replace("'", "''")

@@ -38,6 +38,35 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import IVF_CELLS
+
+#: Per-language sampling fractions of :func:`stratified_sample` and its
+#: twin (downsample dominant en, keep mid langs, thin the tail).
+STRAT_FRACTIONS: dict[str, float] = {
+    "en": 0.5,
+    "de": 0.8,
+    "fr": 0.8,
+    "es": 0.8,
+    "zh": 0.25,
+}
+
+#: Exact per-language row cap of :func:`take_per_stratum` and its twin.
+TAKE_K = 20
+
+#: Rows :func:`weighted_take` and its twin draw.
+WEIGHTED_K = 100
+
+#: Target language mixture of :func:`mixture_report` and its twin —
+#: boost English, rebalance the rest to equal shares (the corpus is
+#: ~44% en).
+MIXTURE_WEIGHTS: dict[str, float] = {
+    "de": 0.15,
+    "en": 0.4,
+    "es": 0.15,
+    "fr": 0.15,
+    "zh": 0.15,
+}
+
 #: The train/val/test weights.
 DEFAULT_SPLITS: tuple[tuple[str, float], ...] = (
     ("train", 0.8),
@@ -68,8 +97,8 @@ _U32_SPAN = 4294967296.0
 _HEX_DIGITS = "0123456789abcdef"
 
 #: Semantic clusters :func:`cluster_balance_sample` (and its twin)
-#: balances token mass across.
-BALANCE_CELLS = 8
+#: balances token mass across: the cells of the seeded IVF quantizer.
+BALANCE_CELLS = IVF_CELLS
 
 
 def hash_bucket(id_col: Column | str, salt: str = "") -> Column:
@@ -146,27 +175,18 @@ def split_case_sql() -> str:
     return f"(CASE {whens} END)"
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: Mapping[str, float],
-) -> DataFrame:
-    """Keep each row iff its hash bucket falls under its stratum's
-    fraction threshold — a deterministic ``sampleBy``.  Strata absent
-    from ``fractions`` are dropped (fraction 0).  The draw is salted ``SAMPLE_SALT``, independent of
+def stratified_sample(df: DataFrame) -> DataFrame:
+    """Keep each row iff its hash bucket falls under its ``lang``
+    stratum's ``STRAT_FRACTIONS`` threshold — a deterministic
+    ``sampleBy``.  Strata absent from ``STRAT_FRACTIONS`` are dropped
+    (fraction 0).  The draw is salted ``SAMPLE_SALT``, independent of
     :func:`split_assign`.  One codegen'd filter; Catalyst pushes it to
     the scan."""
-    if not fractions:
-        raise ValueError(
-            "fractions must name at least one stratum (an empty map "
-            "would sample nothing — pass explicit zero fractions if "
-            "that is the intent)"
-        )
     b = hash_bucket("doc_id", SAMPLE_SALT)
     thr = None
-    for stratum, frac in fractions.items():
+    for stratum, frac in STRAT_FRACTIONS.items():
         hexthr = _frac_hex(frac)
-        cond = F.col(strata_col) == F.lit(stratum)
+        cond = F.col("lang") == F.lit(stratum)
         thr = (
             F.when(cond, hexthr) if thr is None else thr.when(cond, hexthr)
         )
@@ -174,21 +194,21 @@ def stratified_sample(
     return df.filter(b < thr)
 
 
-def stratified_pred_sql(strata_expr: str, fractions: Mapping[str, float]) -> str:
+def stratified_pred_sql() -> str:
     """DuckDB predicate twin of :func:`stratified_sample`."""
     b = hash_bucket_sql("doc_id", SAMPLE_SALT)
     whens = " ".join(
-        f"WHEN {strata_expr} = '{s}' THEN '{_frac_hex(f)}'"
-        for s, f in fractions.items()
+        f"WHEN lang = '{s}' THEN '{_frac_hex(f)}'"
+        for s, f in STRAT_FRACTIONS.items()
     )
     dflt = _frac_hex(0.0)
     return f"({b} < (CASE {whens} ELSE '{dflt}' END))"
 
 
-def take_per_stratum(df: DataFrame, strata_col: str, k: int) -> DataFrame:
-    """EXACTLY ``min(k, |stratum|)`` rows per stratum, deterministically:
-    rows rank within their stratum by ``(salted hash, id)`` and ranks
-    ≤ ``k`` survive.  The fixed-count complement of
+def take_per_stratum(df: DataFrame) -> DataFrame:
+    """EXACTLY ``min(TAKE_K, |stratum|)`` rows per ``lang`` stratum,
+    deterministically: rows rank within their stratum by ``(salted
+    hash, id)`` and ranks ≤ ``TAKE_K`` survive.  The fixed-count complement of
     :func:`stratified_sample` — a fraction gives a binomial-sized
     sample; eval sets, few-shot pools, and per-class caps need an
     exact count.  The ``TAKE_SALT`` draw is independent of both the
@@ -197,7 +217,7 @@ def take_per_stratum(df: DataFrame, strata_col: str, k: int) -> DataFrame:
 
     Scale: the window ranks shuffle once on the stratum key — the
     price of an exact count (a giant stratum is one partition; Spark's
-    WindowGroupLimit pushes the ``rank ≤ k`` limit into the sort, so
+    WindowGroupLimit pushes the ``rank ≤ TAKE_K`` limit into the sort, so
     partial top-k runs map-side before the shuffle).  When an
     approximate count is acceptable, :func:`stratified_sample` does it
     with no shuffle at all.
@@ -206,9 +226,9 @@ def take_per_stratum(df: DataFrame, strata_col: str, k: int) -> DataFrame:
 
     return grouped_top_k(
         df,
-        partition_by=[strata_col],
+        partition_by=["lang"],
         order_by=[hash_bucket("doc_id", TAKE_SALT), F.col("doc_id")],
-        k=k,
+        k=TAKE_K,
         rank_col="__take_rk",
     )
 
@@ -235,8 +255,9 @@ def _hex8_to_long_sql(hex_expr: str) -> str:
     return f"({terms})"
 
 
-def weighted_priority(id_col: Column | str, weight_col: Column | str) -> Column:
-    """Deterministic priority-sampling key (Duffield, Lund & Thorup,
+def weighted_priority() -> Column:
+    """Deterministic priority-sampling key of ``doc_id`` weighted by
+    ``n_chars`` (Duffield, Lund & Thorup,
     "Priority sampling for estimation of arbitrary subset sums",
     J. ACM 54(6), 2007): ``q_i = w_i / u_i`` with ``u_i`` a uniform
     draw in ``(0, 1]`` — the k rows with the LARGEST priorities form a
@@ -252,19 +273,19 @@ def weighted_priority(id_col: Column | str, weight_col: Column | str) -> Column:
     last-ulp behavior is implementation-defined, anywhere in the
     key).  Same id + salt ⇒ same draw on every run and cluster size —
     no ``rand()``, no coordination."""
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
-    h = _hex8_to_long(hash_bucket(id_col, WEIGHTED_SALT))
+    w = F.col("n_chars")
+    h = _hex8_to_long(hash_bucket("doc_id", WEIGHTED_SALT))
     return (
         w.cast("double") * F.lit(_U32_SPAN)
         / (h.cast("double") + F.lit(1.0))
     )
 
 
-def weighted_take(df: DataFrame, k: int, weight_col: str) -> DataFrame:
-    """Deterministic weighted sample WITHOUT replacement: the ``k``
-    rows with the largest :func:`weighted_priority` of ``doc_id``,
-    ties broken by ``doc_id``.  Rows with NULL or non-positive weight are excluded
-    (their priority is undefined).
+def weighted_take(df: DataFrame) -> DataFrame:
+    """Deterministic weighted sample WITHOUT replacement: the
+    ``WEIGHTED_K`` rows with the largest :func:`weighted_priority`,
+    ties broken by ``doc_id``.  Rows with NULL or non-positive
+    ``n_chars`` are excluded (their priority is undefined).
 
     Scale shape: ``orderBy(...).limit(k)`` compiles to
     TakeOrderedAndProject — per-partition top-k then a single bounded
@@ -273,29 +294,29 @@ def weighted_take(df: DataFrame, k: int, weight_col: str) -> DataFrame:
     high quality") that plain :func:`stratified_sample` (equal-weight)
     cannot express."""
     scored = df.filter(
-        F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
-    ).withColumn("priority", weighted_priority("doc_id", weight_col))
-    return scored.orderBy(F.desc("priority"), F.asc("doc_id")).limit(k)
+        F.col("n_chars").isNotNull() & (F.col("n_chars") > 0)
+    ).withColumn("priority", weighted_priority())
+    return scored.orderBy(F.desc("priority"), F.asc("doc_id")).limit(WEIGHTED_K)
 
 
-def weighted_take_sql(table: str, k: int, weight_expr: str, cols: str = "*") -> str:
+def weighted_take_sql() -> str:
     """DuckDB twin of :func:`weighted_take` (same salt, same hash
     decode, same correctly-rounded arithmetic)."""
     h = _hex8_to_long_sql(hash_bucket_sql("doc_id", WEIGHTED_SALT))
     # {span}e0: exponent form parses as DOUBLE in DuckDB (a bare
     # decimal literal would round through DECIMAL — see _fmt_double)
     pri = (
-        f"(CAST({weight_expr} AS DOUBLE) * {int(_U32_SPAN)}e0 "
+        f"(CAST(n_chars AS DOUBLE) * {int(_U32_SPAN)}e0 "
         f"/ (CAST({h} AS DOUBLE) + 1.0))"
     )
     return (
-        f"SELECT {cols}, {pri} AS priority FROM {table} "
-        f"WHERE {weight_expr} IS NOT NULL AND {weight_expr} > 0 "
-        f"ORDER BY priority DESC, doc_id LIMIT {k}"
+        f"SELECT doc_id, n_chars, {pri} AS priority FROM documents "
+        f"WHERE n_chars IS NOT NULL AND n_chars > 0 "
+        f"ORDER BY priority DESC, doc_id LIMIT {WEIGHTED_K}"
     )
 
 
-def take_per_stratum_sql(table: str, strata_expr: str, k: int) -> str:
+def take_per_stratum_sql() -> str:
     """DuckDB twin of :func:`take_per_stratum` (same salt, same
     ``(hash, id)`` order).
 
@@ -306,13 +327,13 @@ def take_per_stratum_sql(table: str, strata_expr: str, k: int) -> str:
     b = hash_bucket_sql("doc_id", TAKE_SALT)
     return (
         f"SELECT * EXCLUDE (__take_rk) FROM ("
-        f"SELECT *, ROW_NUMBER() OVER (PARTITION BY {strata_expr} "
+        f"SELECT *, ROW_NUMBER() OVER (PARTITION BY lang "
         # NULLS FIRST pins Spark's ASC default (DuckDB defaults LAST):
         # a NULL id would otherwise rank first on one engine and last
         # on the other, flipping which row survives a full stratum
         f"ORDER BY {b} NULLS FIRST, doc_id NULLS FIRST) "
-        f"AS __take_rk FROM {table}"
-        f") WHERE __take_rk <= {k}"
+        f"AS __take_rk FROM documents"
+        f") WHERE __take_rk <= {TAKE_K}"
     )
 
 
@@ -414,15 +435,15 @@ def mixture_sample(
     df: DataFrame,
     weights: Mapping[str, float],
     domain_col: str = "source",
-    tokens: Column | str = "n_chars",
 ) -> DataFrame:
-    """The rebalanced corpus itself: rows of targeted domains whose
+    """The rebalanced corpus itself, weighed in ``n_tokens``: rows of
+    targeted domains whose
     salted hash bucket falls under their domain's
     :func:`mixture_rates` threshold.  Untargeted domains drop.  The
     rates frame (|domains| rows) broadcasts onto the corpus — the
     membership decision is a map-side hash compare, no corpus
     shuffle, same sample on every run and cluster size."""
-    rates = mixture_rates(df, weights, domain_col=domain_col, tokens=tokens)
+    rates = mixture_rates(df, weights, domain_col=domain_col, tokens="n_tokens")
     thr = rates.select(F.col("domain").alias(domain_col), "__thr")
     return (
         df.join(F.broadcast(thr), on=domain_col)
@@ -431,20 +452,15 @@ def mixture_sample(
     )
 
 
-def mixture_report(
-    df: DataFrame,
-    weights: Mapping[str, float],
-    domain_col: str = "source",
-    tokens: Column | str = "n_chars",
-) -> DataFrame:
-    """Accounting panel for :func:`mixture_sample`: per domain the
-    corpus totals, target weight, keep rate, kept docs/tokens, and
+def mixture_report(df: DataFrame, tokens: Column | str) -> DataFrame:
+    """Accounting panel for :func:`mixture_sample` over ``lang`` at the
+    ``MIXTURE_WEIGHTS`` targets: per domain the corpus totals, target weight, keep rate, kept docs/tokens, and
     the ACHIEVED token share — the number that should land on the
     target weight (up to per-document sampling granularity)."""
     tok = (F.col(tokens) if isinstance(tokens, str) else tokens).cast("bigint")
-    rates = mixture_rates(df, weights, domain_col=domain_col, tokens=tokens)
-    d = df.filter(F.col(domain_col).isin(list(weights))).select(
-        F.col(domain_col).alias("domain"),
+    rates = mixture_rates(df, MIXTURE_WEIGHTS, domain_col="lang", tokens=tokens)
+    d = df.filter(F.col("lang").isin(list(MIXTURE_WEIGHTS))).select(
+        F.col("lang").alias("domain"),
         F.col("doc_id").alias("__id"),
         tok.alias("__tok"),
     )
@@ -525,7 +541,6 @@ def mixture_sample_sql(
     weights: Mapping[str, float],
     table: str = "documents",
     domain_expr: str = "source",
-    tokens_expr: str = "n_chars",
     cols: str = "*",
 ) -> str:
     """DuckDB twin of :func:`mixture_sample` — the kept ROWS, not the
@@ -538,25 +553,21 @@ def mixture_sample_sql(
     return f"""
 SELECT {cols}
 FROM {table}
-JOIN (WITH {_mixture_threshold_ctes(weights, table, domain_expr, tokens_expr)}
+JOIN (WITH {_mixture_threshold_ctes(weights, table, domain_expr, "n_tokens")}
       SELECT domain, __thr FROM __h) __mx
   ON {domain_expr} = __mx.domain
 WHERE {b} < __mx.__thr
 """
 
 
-def mixture_report_sql(
-    weights: Mapping[str, float],
-    domain_expr: str = "source",
-    tokens_expr: str = "n_chars",
-) -> str:
+def mixture_report_sql(tokens_expr: str) -> str:
     """DuckDB twin of :func:`mixture_report` over ``documents`` — same salt, same
     in-engine rate derivation (weights rendered via :func:`_fmt_double`
     so both engines hold the identical doubles), same hex-threshold
     clamp."""
     b = hash_bucket_sql("d.__id", MIXTURE_SALT)
     return f"""
-WITH {_mixture_threshold_ctes(weights, "documents", domain_expr, tokens_expr)}, __k AS (
+WITH {_mixture_threshold_ctes(MIXTURE_WEIGHTS, "documents", "lang", tokens_expr)}, __k AS (
   SELECT d.domain, COUNT(*) AS kept_docs,
          CAST(SUM(d.__tok) AS BIGINT) AS kept_tokens
   FROM __d d JOIN __h h USING (domain)
@@ -680,7 +691,7 @@ def cluster_balance_sample(df: DataFrame, embeddings: DataFrame) -> DataFrame:
         norm(vcast).alias("__n"),
     )
     cent_rows = _collect_centroids(
-        seed_centroids(embeddings, BALANCE_CELLS)
+        seed_centroids(embeddings)
     )
     assigned = _assign_cells_literal(corpus, cent_rows).select(
         F.col("vec_id").alias("doc_id"),
@@ -692,13 +703,12 @@ def cluster_balance_sample(df: DataFrame, embeddings: DataFrame) -> DataFrame:
         tagged,
         weights,
         domain_col="cluster_id",
-        tokens="n_tokens",
     )
 
 
-def cluster_balance_sample_sql(table: str, cols: str = "*") -> str:
-    """DuckDB twin of :func:`cluster_balance_sample` over a named
-    relation ``table`` carrying ``doc_id`` rows: the SHARED seeded
+def cluster_balance_sample_sql(cols: str = "*") -> str:
+    """DuckDB twin of :func:`cluster_balance_sample` over the relation
+    ``good`` carrying ``doc_id`` rows: the SHARED seeded
     centroid/assignment SQL of the IVF twins (the ``BALANCE_CELLS`` smallest
     vec_ids as centroids, nearest-cell by cosine with the (sim DESC,
     cell_id) tie-break) feeding :func:`mixture_sample_sql` with the
@@ -710,7 +720,6 @@ def cluster_balance_sample_sql(table: str, cols: str = "*") -> str:
         weights,
         table="__tagged",
         domain_expr="cluster_id",
-        tokens_expr="n_tokens",
         cols=cols,
     )
     return f"""
@@ -728,7 +737,7 @@ WITH __cents AS (
   QUALIFY row_number() OVER (PARTITION BY e.vec_id
       ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell_id) = 1
 ), __tagged AS (
-  SELECT t.*, a.cluster_id FROM {table} t
+  SELECT t.*, a.cluster_id FROM good t
   JOIN __assigned a ON a.vec_id = t.doc_id
 )
 {member}"""

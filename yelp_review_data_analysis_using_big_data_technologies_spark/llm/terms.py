@@ -41,6 +41,17 @@ _TOK_SQL = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
 BM25_K1 = 1.2
 BM25_B = 0.75
 
+#: The fixed lexical query over the synthetic vocabulary (df-diverse)
+#: of the pseudo-relevance-feedback loop (:func:`prf_expansion_terms`,
+#: :func:`bm25_prf_topk` and their twins): its BM25 top-``PRF_FEEDBACK_K``
+#: feedback docs nominate ``PRF_EXPAND_M`` expansion terms.
+BM25_QUERY = ("spark", "vector", "merge")
+PRF_FEEDBACK_K = 5
+PRF_EXPAND_M = 3
+
+#: Smoothing constant of :func:`rrf_fuse` (Cormack et al.'s 60).
+RRF_K = 60
+
 #: Terms kept per document by :func:`tf_idf_top_terms` and its twin.
 TOP_TERMS = 3
 
@@ -690,29 +701,22 @@ def bm25_topk(
 
 def prf_expansion_terms(
     docs: DataFrame,
-    query_terms: Sequence[str],
-    feedback_k: int = 5,
-    expand_m: int = 3,
     tokenized: DataFrame | None = None,
 ) -> DataFrame:
     """Pseudo-relevance-feedback expansion terms (the RM3-lite loop
     every lexical stack runs when recall matters): take the BM25
-    top-``feedback_k`` docs for the original query, score their
+    top-``PRF_FEEDBACK_K`` docs for ``BM25_QUERY``, score their
     OTHER terms by ``idf(t) · tf_in_feedback(t)`` (same smoothed idf
-    as BM25, corpus-wide df), and return the top-``expand_m``
+    as BM25, corpus-wide df), and return the top-``PRF_EXPAND_M``
     → ``(term, tf_fb, df, score, rk)``.
 
     Plan shape: the feedback doc set is the BM25 top-k (bounded);
-    its token explode is over ``feedback_k`` docs only; the
+    its token explode is over ``PRF_FEEDBACK_K`` docs only; the
     corpus-wide df pass explodes the corpus ONCE and collapses
     immediately on the broadcast feedback-term set (the bm25_topk
     discipline).  Deterministic: 6-dp rounded score, (score DESC,
     term ASC) tie order — twin-reproducible."""
-    if feedback_k < 1:
-        raise ValueError(f"feedback_k must be >= 1, got {feedback_k}")
-    if expand_m < 1:
-        raise ValueError(f"expand_m must be >= 1, got {expand_m}")
-    q0 = sorted(set(query_terms))
+    q0 = sorted(set(BM25_QUERY))
     sid = F.col("doc_id")
     # one shared tokenize pass (r15 opt): the feedback BM25 round, the
     # feedback-term explode, the corpus-df pass, and the corpus count
@@ -724,7 +728,7 @@ def prf_expansion_terms(
         else tokenized_corpus(docs)
     )
     fb_ids = bm25_topk(
-        docs, q0, k=feedback_k, tokenized=tk,
+        docs, q0, k=PRF_FEEDBACK_K, tokenized=tk,
     ).select("doc_id")
     fb_tf = (
         tk.join(F.broadcast(fb_ids), on="doc_id", how="left_semi")
@@ -759,7 +763,7 @@ def prf_expansion_terms(
     )
     from pyspark.sql import Window
 
-    topm = scored.orderBy(F.desc("score"), F.asc("term")).limit(expand_m)
+    topm = scored.orderBy(F.desc("score"), F.asc("term")).limit(PRF_EXPAND_M)
     w = Window.orderBy(F.desc("score"), F.asc("term"))
     return (
         topm.withColumn("rk", F.row_number().over(w).cast("int"))
@@ -771,16 +775,13 @@ def prf_expansion_terms(
 
 def bm25_prf_topk(
     docs: DataFrame,
-    query_terms: Sequence[str],
     k: int = 10,
-    feedback_k: int = 5,
-    expand_m: int = 3,
     tokenized: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 with one pseudo-relevance-feedback round: re-run
-    :func:`bm25_topk` over ``query_terms ∪ top-expand_m expansion
+    :func:`bm25_topk` over ``BM25_QUERY ∪ top-PRF_EXPAND_M expansion
     terms`` (:func:`prf_expansion_terms`).  The expansion term set is
-    a bounded collect (≤ ``expand_m`` strings — the codebook class of
+    a bounded collect (≤ ``PRF_EXPAND_M`` strings — the codebook class of
     driver-side state), everything else stays distributed.  The whole
     round — feedback retrieval, expansion scoring, expanded re-query —
     scores over ONE shared :func:`tokenized_corpus` relation (r15 opt:
@@ -792,32 +793,23 @@ def bm25_prf_topk(
     )
     exp = [
         r["term"]
-        for r in prf_expansion_terms(
-            docs,
-            query_terms,
-            feedback_k=feedback_k,
-            expand_m=expand_m,
-            tokenized=tk,
-        ).collect()
+        for r in prf_expansion_terms(docs, tokenized=tk).collect()
     ]
-    expanded = sorted(set(query_terms) | set(exp))
+    expanded = sorted(set(BM25_QUERY) | set(exp))
     return bm25_topk(
         docs, expanded, k=k, tokenized=tk,
     )
 
 
-def _sql_term_lits(terms: Sequence[str]) -> str:
-    return ", ".join(
-        "'" + t.replace("'", "''") + "'" for t in sorted(set(terms))
-    )
+#: ``BM25_QUERY`` as sorted, quote-escaped SQL string literals.
+_QUERY_LITS = ", ".join("'" + t.replace("'", "''") + "'" for t in sorted(set(BM25_QUERY)))
 
 
-def bm25_topk_sql(query_terms: Sequence[str], k: int = 10) -> str:
-    """DuckDB twin of :func:`bm25_topk` — same tokenizer class, same
-    smoothed idf and length normalization, same rounded tie order."""
-    return _bm25_body_sql(
-        f"({_sql_term_lits(query_terms)})", k=k
-    )
+def bm25_topk_sql(k: int = 10) -> str:
+    """DuckDB twin of :func:`bm25_topk` over ``BM25_QUERY`` — same
+    tokenizer class, same smoothed idf and length normalization, same
+    rounded tie order."""
+    return _bm25_body_sql(f"({_QUERY_LITS})", k=k)
 
 
 def _bm25_body_sql(terms_src: str, k: int, pre_ctes: str = "") -> str:
@@ -864,18 +856,12 @@ ORDER BY rk
 """
 
 
-def prf_expansion_terms_sql(
-    query_terms: Sequence[str],
-    feedback_k: int = 5,
-    expand_m: int = 3,
-) -> str:
+def prf_expansion_terms_sql() -> str:
     """DuckDB twin of :func:`prf_expansion_terms` — the feedback set
     from the BM25 twin, same smoothed idf · feedback-tf score, same
     rounded tie order."""
-    q0 = _sql_term_lits(query_terms)
-    fb = bm25_topk_sql(
-        query_terms, k=feedback_k
-    )
+    q0 = _QUERY_LITS
+    fb = bm25_topk_sql(k=PRF_FEEDBACK_K)
     return f"""
 WITH fb AS ({fb}),
 base AS (
@@ -903,26 +889,17 @@ FROM (
          round(ln(1.0 + (n - df + 0.5) / (df + 0.5)) * tf_fb, 6) AS score
   FROM fb_tf JOIN cdf USING (term) CROSS JOIN n1
 )
-QUALIFY rk <= {expand_m}
+QUALIFY rk <= {PRF_EXPAND_M}
 ORDER BY rk
 """
 
 
-def bm25_prf_topk_sql(
-    query_terms: Sequence[str],
-    k: int = 10,
-    feedback_k: int = 5,
-    expand_m: int = 3,
-) -> str:
+def bm25_prf_topk_sql(k: int = 10) -> str:
     """DuckDB twin of :func:`bm25_prf_topk` — the expanded query set
     is derived IN-SQL (expansion twin → union with the original
     terms) and fed to the shared BM25 body via a qterms CTE."""
-    exp = prf_expansion_terms_sql(
-        query_terms,
-        feedback_k=feedback_k,
-        expand_m=expand_m,
-    )
-    q0 = _sql_term_lits(query_terms)
+    exp = prf_expansion_terms_sql()
+    q0 = _QUERY_LITS
     pre = (
         f"expq AS ({exp}), "
         f"qterms AS (SELECT term AS t FROM expq "
@@ -1004,10 +981,10 @@ FROM top CROSS JOIN tot ORDER BY rk
 """
 
 
-def rrf_fuse(rankings: Sequence[DataFrame], rrf_k: int = 60) -> DataFrame:
+def rrf_fuse(rankings: Sequence[DataFrame]) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al., SIGIR'09) of N ranked
     retrievals → ``(id, rrf_score, n_lists)``: score = Σ over lists of
-    ``1/(rrf_k + rank)``.  THE standard hybrid-search combiner —
+    ``1/(RRF_K + rank)``.  THE standard hybrid-search combiner —
     rank-based, so a BM25 score and a cosine similarity fuse without
     any calibration.  Each input carries (id, rank); ids missing from
     a list simply contribute nothing (no penalty term).  Output is
@@ -1016,12 +993,10 @@ def rrf_fuse(rankings: Sequence[DataFrame], rrf_k: int = 60) -> DataFrame:
     partial agg."""
     if not rankings:
         raise ValueError("rankings must contain at least one DataFrame")
-    if rrf_k < 1:
-        raise ValueError(f"rrf_k must be >= 1, got {rrf_k}")
     parts = [
         r.select(
             F.col("doc_id"),
-            (F.lit(1.0) / (F.lit(float(rrf_k)) + F.col("rk").cast("double"))).alias(
+            (F.lit(1.0) / (F.lit(float(RRF_K)) + F.col("rk").cast("double"))).alias(
                 "__c"
             ),
         )

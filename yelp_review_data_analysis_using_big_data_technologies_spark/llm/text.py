@@ -56,53 +56,56 @@ def tokens(text: Column | str) -> Column:
     return F.split(_col(text), WS)
 
 
-def token_count(text: Column | str) -> Column:
-    """Number of whitespace tokens."""
-    return F.size(tokens(text))
+def token_count() -> Column:
+    """Number of whitespace tokens of ``text``."""
+    return F.size(tokens("text"))
 
 
-def bpe_token_count(text: Column | str) -> Column:
-    """Token count under the BPE-ish pre-tokenizer regex (word runs +
-    punctuation runs) — the usual first-order estimate of LLM token
+def bpe_token_count() -> Column:
+    """Token count of ``text`` under the BPE-ish pre-tokenizer regex
+    (word runs + punctuation runs) — the usual first-order estimate of LLM token
     cost, computed JVM-side via ``regexp_extract_all``."""
-    return F.size(F.regexp_extract_all(_col(text), F.lit(BPE_TOKEN), 0))
+    return F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN), 0))
 
 
-def avg_token_length(text: Column | str) -> Column:
-    """Mean characters per whitespace token."""
-    t = tokens(text)
+def avg_token_length() -> Column:
+    """Mean characters per whitespace token of ``text``."""
+    t = tokens("text")
     return F.aggregate(
         t, F.lit(0.0), lambda acc, x: acc + F.length(x)
     ) / F.size(t)
 
 
-def punct_ratio(text: Column | str) -> Column:
-    """Share of characters that are neither word chars nor whitespace.
+def punct_ratio() -> Column:
+    """Share of ``text``'s characters that are neither word chars nor
+    whitespace.
     Empty text scores 0.0 — the bare division would raise
     DIVIDE_BY_ZERO under Spark 4's default ANSI mode and abort the
     whole scoring job on the first empty document (SQL twins carry the
     same CASE guard)."""
-    c = _col(text)
+    c = F.col("text")
     return F.when(F.length(c) == 0, F.lit(0.0)).otherwise(
         F.length(F.regexp_replace(c, rf"[\w{WS_CHARS}]", "")) / F.length(c)
     )
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    """Share of whitespace tokens that are stopwords (duplicates count,
-    so ``marker_hits``' filter+contains counting, not the deduping
-    ``array_intersect``)."""
-    return marker_hits(text, STOPWORDS) / F.size(tokens(text))
+def stopword_ratio() -> Column:
+    """Share of ``text``'s whitespace tokens that are stopwords
+    (duplicates count, so ``marker_hits``' filter+contains counting,
+    not the deduping ``array_intersect``)."""
+    return marker_hits(STOPWORDS) / F.size(tokens("text"))
 
 
-def marker_hits(text: Column | str, markers: Sequence[str]) -> Column:
-    """Count of tokens that appear in ``markers`` (duplicates count)."""
+def marker_hits(markers: Sequence[str]) -> Column:
+    """Count of ``text``'s tokens that appear in ``markers``
+    (duplicates count)."""
     m = F.array(*[F.lit(w) for w in markers])
-    return F.size(F.filter(tokens(text), lambda x: F.array_contains(m, x)))
+    return F.size(F.filter(tokens("text"), lambda x: F.array_contains(m, x)))
 
 
-def lang_id(text: Column | str) -> Column:
-    """Marker-word language-ID heuristic: score each candidate language
+def lang_id() -> Column:
+    """Marker-word language-ID heuristic over ``text``: score each
+    candidate language
     by how many of its marker words occur, pick the max; ties resolve
     in ``LANG_MARKERS`` order; all-zero → ``"und"``.
 
@@ -111,7 +114,7 @@ def lang_id(text: Column | str) -> Column:
     shared word pool makes most docs ``"und"``; the operator is the
     deliverable, the corpus isn't natural language.)
     """
-    scores = {lang: marker_hits(text, mk) for lang, mk in LANG_MARKERS.items()}
+    scores = {lang: marker_hits(mk) for lang, mk in LANG_MARKERS.items()}
     langs = list(scores)
     best = F.greatest(*scores.values()) if len(langs) > 1 else scores[langs[0]]
     expr = None
@@ -121,10 +124,10 @@ def lang_id(text: Column | str) -> Column:
     return expr.otherwise(F.lit("und"))
 
 
-def lang_id_sql(text_expr: str) -> str:
+def lang_id_sql() -> str:
     """DuckDB twin of :func:`lang_id`, generated from the SAME marker
     dict so scores and tie-break order agree exactly."""
-    tok = f"regexp_split_to_array({text_expr}, '[ \\t\\n\\x0B\\f\\r]+')"
+    tok = "regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')"
     score = {}
     for lang, mk in LANG_MARKERS.items():
         lit = "[" + ", ".join(f"'{w}'" for w in mk) + "]"
@@ -137,17 +140,18 @@ def lang_id_sql(text_expr: str) -> str:
     return f"(CASE {cases} ELSE 'und' END)"
 
 
-def quality_score(text: Column | str) -> Column:
-    """Composite quality heuristic in [0, 1]: rewards mid-range length,
-    low punctuation density, and a sane mean token length.
+def quality_score() -> Column:
+    """Composite quality heuristic of ``text`` in [0, 1]: rewards
+    mid-range length, low punctuation density, and a sane mean token
+    length.
 
     score = 0.4 * min(n_tokens / 64, 1)
           + 0.3 * (1 - min(punct_ratio * 5, 1))
           + 0.3 * (1 if 3 <= avg_token_len <= 10 else 0)
     """
-    ntok = token_count(text).cast("double")
-    p = punct_ratio(text)
-    atl = avg_token_length(text)
+    ntok = token_count().cast("double")
+    p = punct_ratio()
+    atl = avg_token_length()
     return (
         F.lit(0.4) * F.least(ntok / F.lit(64.0), F.lit(1.0))
         + F.lit(0.3) * (F.lit(1.0) - F.least(p * F.lit(5.0), F.lit(1.0)))
@@ -194,8 +198,14 @@ def shingled(
     )
 
 
-def minhash_signature_from(shingle_col: Column, num_hashes: int = 6) -> Column:
-    """Signature from an ALREADY-BUILT shingle array column.
+#: Width of every MinHash signature: the banded LSH shape of
+#: ``llm.dedup`` splits it into ``BANDS`` bands.
+NUM_HASHES = 6
+
+
+def minhash_signature_from(shingle_col: Column) -> Column:
+    """``NUM_HASHES``-wide signature from an ALREADY-BUILT shingle
+    array column.
 
     Use this when the shingle array is materialized in the plan (e.g.
     the LSH join builds it once and reuses it) — deriving the signature
@@ -214,4 +224,4 @@ def minhash_signature_from(shingle_col: Column, num_hashes: int = 6) -> Column:
             )
         )
 
-    return F.array(*[salted_min(i) for i in range(num_hashes)])
+    return F.array(*[salted_min(i) for i in range(NUM_HASHES)])

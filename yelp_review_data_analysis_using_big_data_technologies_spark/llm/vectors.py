@@ -68,17 +68,40 @@ N_BANDS = 3
 COS_THRESHOLD = 0.4
 
 
-def _frozen_planes(n_planes: int = N_PLANES) -> list[list[float]]:
+#: The ANN dials every registered entry and its twin run: the
+#: top-``TOP_K`` results for the ``N_QUERIES`` lowest-id vectors as
+#: queries, over an ``IVF_CELLS``-cell coarse quantizer probed at
+#: ``IVF_PROBE`` cells; the recall profiles sweep ``RECALL_PROBES``
+#: (raw IVF) and ``PQ_RECALL_RERANK`` (IVF-PQ) at those dials.
+N_QUERIES = 5
+TOP_K = 5
+IVF_CELLS = 8
+IVF_PROBE = 2
+RECALL_PROBES = (1, 2, 4, 8)
+PQ_RECALL_RERANK = (1, 2, 4)
+
+#: MMR re-rank (:func:`mmr_rerank`, :func:`mmr_rerank_candidates` and
+#: their twins): ``MMR_K`` picks from the exact-cosine top-``MMR_POOL``
+#: at diversity weight ``MMR_LAMBDA``.
+MMR_K = 8
+MMR_POOL = 20
+MMR_LAMBDA = 0.7
+
+#: Metadata predicate of the filtered index searches and their twin.
+FILTERED_ANN_PRED = "label = 3 AND vec_id % 7 = 0"
+
+
+def _frozen_planes() -> list[list[float]]:
     import numpy as np
 
     rng = np.random.default_rng(42)
-    return [[round(float(x), 6) for x in rng.standard_normal(EMBEDDING_DIM)] for _ in range(n_planes)]
+    return [[round(float(x), 6) for x in rng.standard_normal(EMBEDDING_DIM)] for _ in range(POOL_PLANES)]
 
 
 #: The seeded RNG emits plane rows sequentially, so the pool's prefix
 #: is bit-identical to the original 8-plane list — existing ANN bucket
 #: assignments (and their oracle twins) are unchanged.
-PLANE_POOL: list[list[float]] = _frozen_planes(POOL_PLANES)
+PLANE_POOL: list[list[float]] = _frozen_planes()
 PLANES: list[list[float]] = PLANE_POOL[:N_PLANES]
 
 
@@ -237,13 +260,13 @@ def _seed_centroid_rows(
 
 
 def _coarse_rows(
-    corpus: DataFrame, n_cells: int, centroids: DataFrame | None
+    corpus: DataFrame, centroids: DataFrame | None
 ) -> list[tuple[int, list[float]]]:
     """The coarse quantizer's rows: the given ``centroids`` frame if
-    any, else the seed quantizer over ``corpus``."""
+    any, else the ``IVF_CELLS``-cell seed quantizer over ``corpus``."""
     if centroids is not None:
         return _collect_centroids(centroids)
-    return _seed_centroid_rows(corpus, "vec_id", n_cells)
+    return _seed_centroid_rows(corpus, "vec_id", IVF_CELLS)
 
 
 def _vector_corpus(
@@ -369,16 +392,10 @@ def top_k_bruteforce(
     return _rank_top_k(scored, k, "query_id", "vec_id")
 
 
-def mmr_rerank(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 8,
-    pool: int = 20,
-    lam: float = 0.7,
-) -> DataFrame:
+def mmr_rerank(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     """Maximal-marginal-relevance re-rank (Carbonell & Goldstein,
     SIGIR'98) → ``(query_id, vec_id, rel, mmr, rk)``: greedily pick
-    ``k`` results per query from the exact-cosine top-``pool``
+    ``MMR_K`` results per query from the exact-cosine top-``MMR_POOL``
     candidates, each pick maximising
     ``λ·rel(d) − (1−λ)·max_{s∈selected} sim(d, s)`` — the standard
     diversity pass a retrieval stack runs after BM25/ANN/RRF so the
@@ -389,28 +406,21 @@ def mmr_rerank(
     searcher at scale); the greedy selection is sequential within a
     query but independent across queries, so it runs as one grouped
     map per query over that query's pool rows and its pool²
-    pairwise-similarity rows (pool=20 → 380 sims per query), see
+    pairwise-similarity rows (20 → 380 sims per query), see
     :func:`mmr_rerank_candidates`.
 
     Determinism: relevance and pairwise sims carry the 6-dp contract;
     each argmax orders by (rounded score DESC, id ASC), so the twin's
     unrolled CTE chain picks identical sequences."""
-    if pool < k:
-        raise ValueError(f"pool must be >= k, got pool={pool} k={k}")
     rel = top_k_bruteforce(
         embeddings,
         queries,
-        k=pool,
+        k=MMR_POOL,
     ).select("query_id", "vec_id", F.col("cos_sim").alias("rel"))
-    return mmr_rerank_candidates(
-        rel,
-        embeddings,
-        k=k,
-        lam=lam,
-    )
+    return mmr_rerank_candidates(rel, embeddings, k=MMR_K)
 
 
-def _mmr_greedy_pool(pool: dict, sim, k: int, lam: float) -> list:
+def _mmr_greedy_pool(pool: dict, sim, k: int) -> list:
     """The inherently-sequential greedy over ONE query's candidate
     pool: ``pool`` maps id → rel (duplicates already max-resolved),
     ``sim(a, b)`` returns the 6-dp pairwise cosine.  Returns
@@ -419,7 +429,7 @@ def _mmr_greedy_pool(pool: dict, sim, k: int, lam: float) -> list:
     ``_round6`` reproduces ``F.round``'s BigDecimal HALF_UP (Python's
     repr and Java's Double.toString emit the same shortest round-trip
     decimal); ties break on (score DESC, id ASC)."""
-    one_m = 1.0 - lam
+    lam, one_m = MMR_LAMBDA, 1.0 - MMR_LAMBDA
     selected: list = []
     remaining = dict(pool)
     out: list = []
@@ -447,9 +457,8 @@ def mmr_rerank_candidates(
     cand_rel: DataFrame,
     embeddings: DataFrame,
     k: int = 8,
-    lam: float = 0.7,
 ) -> DataFrame:
-    """Greedy MMR over PRE-SCORED candidates: ``cand_rel`` carries
+    """Greedy ``MMR_LAMBDA`` MMR over PRE-SCORED candidates: ``cand_rel`` carries
     ``(query_id, vec_id, rel)`` where ``rel`` is any relevance
     score whose ORDER the greedy argmax should respect — exact cosine
     (:func:`mmr_rerank`), an RRF fusion score (the serving pipeline),
@@ -466,8 +475,6 @@ def mmr_rerank_candidates(
     building the plan runs no Spark job."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
     rel = cand_rel.select("query_id", "vec_id", "rel")
     vecs = embeddings.filter(finite_vec("embedding")).select(
         F.col("vec_id"), F.col("embedding").cast("array<double>").alias("__v")
@@ -527,7 +534,7 @@ def mmr_rerank_candidates(
                     pool[ia] = s
             else:
                 sims[(ia, ib)] = s
-        picks = _mmr_greedy_pool(pool, lambda a, b: sims[(a, b)], k, lam)
+        picks = _mmr_greedy_pool(pool, lambda a, b: sims[(a, b)], k)
         return pd.DataFrame(
             {
                 "query_id": [q] * len(picks),
@@ -546,7 +553,7 @@ def mmr_rerank_candidates(
     )
 
 
-def mmr_greedy_sql(rel_select: str, k: int, lam: float, pre_ctes: str = "") -> str:
+def mmr_greedy_sql(rel_select: str, k: int, pre_ctes: str = "") -> str:
     """The greedy-MMR CTE chain over an arbitrary candidate SELECT —
     ``rel_select`` must produce ``(query_id, vec_id, rel, v)`` where
     ``v`` is the DOUBLE[] embedding used for pairwise diversity sims
@@ -579,7 +586,7 @@ WITH {pre_ctes}rel AS MATERIALIZED (
   UNION ALL
   SELECT query_id, vec_id, rel, mmr, {t} AS rk FROM (
     SELECT r.query_id, r.vec_id, r.rel,
-           round({lam:.17g} * r.rel - {1.0 - lam:.17g} * ms.m, 6) AS mmr
+           round({MMR_LAMBDA:.17g} * r.rel - {1.0 - MMR_LAMBDA:.17g} * ms.m, 6) AS mmr
     FROM rel r
     JOIN (
       SELECT p.query_id, p.ia, max(p.s) AS m
@@ -606,22 +613,17 @@ FROM sel{k} ORDER BY query_id, rk
     return "".join(parts)
 
 
-def mmr_rerank_sql(
-    k: int = 8,
-    pool: int = 20,
-    lam: float = 0.7,
-    n_queries: int = 5,
-) -> str:
+def mmr_rerank_sql() -> str:
     """DuckDB twin of :func:`mmr_rerank` over the standard
-    ``embeddings`` fixture (query set = ``vec_id < n_queries``) — the
-    exact-cosine top-``pool`` candidates fed to the shared greedy
+    ``embeddings`` fixture (query set = ``vec_id < N_QUERIES``) — the
+    exact-cosine top-``MMR_POOL`` candidates fed to the shared greedy
     chain (:func:`mmr_greedy_sql`)."""
     pre = f"""c AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   WHERE {VEC_OK_SQL}
 ), q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id < {n_queries} AND {VEC_OK_SQL}
+  FROM embeddings WHERE vec_id < {N_QUERIES} AND {VEC_OK_SQL}
 ), """
     rel_select = f"""  SELECT query_id, vec_id, round(cos, 6) AS rel, v FROM (
     SELECT q.query_id, c.vec_id, list_cosine_similarity(c.v, q.qv) AS cos,
@@ -631,8 +633,8 @@ def mmr_rerank_sql(
              ORDER BY list_cosine_similarity(c.v, q.qv) DESC, c.vec_id
            ) AS rk
     FROM c CROSS JOIN q
-  ) WHERE rk <= {pool}"""
-    return mmr_greedy_sql(rel_select, k=k, lam=lam, pre_ctes=pre)
+  ) WHERE rk <= {MMR_POOL}"""
+    return mmr_greedy_sql(rel_select, k=MMR_K, pre_ctes=pre)
 
 
 def sign_bucket(vec: Column | str, planes: list[list[float]] = PLANES) -> Column:
@@ -646,14 +648,14 @@ def sign_bucket(vec: Column | str, planes: list[list[float]] = PLANES) -> Column
     return out
 
 
-def sign_bucket_sql(vec_expr: str, planes: list[list[float]] = PLANES) -> str:
-    """DuckDB twin of :func:`sign_bucket`, generated from the SAME
-    frozen plane literals."""
+def sign_bucket_sql(planes: list[list[float]] = PLANES) -> str:
+    """DuckDB twin of :func:`sign_bucket` over ``embedding``, generated
+    from the SAME frozen plane literals."""
     terms = []
     for i, p in enumerate(planes):
         lit = "[" + ", ".join(repr(x) for x in p) + "]"
         terms.append(
-            f"CASE WHEN list_dot_product(CAST({vec_expr} AS DOUBLE[]), {lit}) >= 0 "
+            f"CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), {lit}) >= 0 "
             f"THEN {2**i} ELSE 0 END"
         )
     return "(" + " + ".join(terms) + ")"
@@ -662,10 +664,9 @@ def sign_bucket_sql(vec_expr: str, planes: list[list[float]] = PLANES) -> str:
 def top_k_ann_signlsh(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 5,
     planes: list[list[float]] = PLANES,
 ) -> DataFrame:
-    """Approximate top-k: bucket corpus and queries by sign-LSH, join
+    """Approximate top-``TOP_K``: bucket corpus and queries by sign-LSH, join
     ON THE BUCKET (equi-join, shuffle partitioned by bucket — the
     bucket key replaces the crossJoin), rank within bucket.
 
@@ -681,7 +682,7 @@ def top_k_ann_signlsh(
     scored = corpus.join(F.broadcast(q), on="__bucket").withColumn(
         "__cos", cosine("__v", "__q")
     )
-    return _rank_top_k(scored, k, "query_id", "vec_id")
+    return _rank_top_k(scored, TOP_K, "query_id", "vec_id")
 
 
 def derive_n_planes(n_rows: int) -> int:
@@ -819,11 +820,7 @@ def cosine_near_dup_pairs(
     )
 
 
-def cosine_dedup_delta(
-    corpus: DataFrame,
-    delta: DataFrame,
-    n_planes: int | None = None,
-) -> DataFrame:
+def cosine_dedup_delta(corpus: DataFrame, delta: DataFrame) -> DataFrame:
     """Incremental SEMANTIC dedup at the embedding level (r12 — the
     vector analogue of ``llm.dedup.dedup_against_corpus``): keep only
     the ``delta`` rows with NO cosine near-duplicate (≥ ``COS_THRESHOLD``)
@@ -836,17 +833,13 @@ def cosine_dedup_delta(
     Scale shape: per-batch cost ∝ delta size × bucket collision
     fan-in, independent of how big the corpus has grown (the corpus
     side contributes one narrow key projection + the matched
-    candidates' vectors); ``n_planes`` derives from the UNION count
-    so expected bucket population stays ~1024 as
-    the corpus grows.  Returns ``delta`` rows (original columns)
-    that were admitted."""
+    candidates' vectors).  Bands are 4 planes wide, the width the
+    DuckDB twin pins (``_band_planes(4)``), so the twin and the
+    operator agree at every scale.  Returns ``delta`` rows (original
+    columns) that were admitted."""
     corpus = corpus.filter(finite_vec("embedding"))
     delta_ok = delta.filter(finite_vec("embedding"))
-    if n_planes is None:
-        n_planes = derive_n_planes(
-            corpus.count() + delta_ok.count()
-        )
-    bands = _band_planes(n_planes)
+    bands = _band_planes(4)
     base_c, keys_c = _band_side(corpus, bands)
     base_d, keys_d = _band_side(delta_ok, bands)
     # R-S candidates: delta keys × corpus keys within a (band, bucket)
@@ -877,7 +870,7 @@ def cosine_near_dup_sql() -> str:
     default is a runtime scalar the static SQL can't know."""
     bands = _band_planes(4)
     bucket_list = "[" + ", ".join(
-        sign_bucket_sql("embedding", planes) for planes in bands
+        sign_bucket_sql(planes) for planes in bands
     ) + "]"
     return f"""
 WITH e AS (
@@ -898,14 +891,14 @@ WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= {COS_THRESHOLD}
 """
 
 
-def seed_centroids(embeddings: DataFrame, n_cells: int = 8) -> DataFrame:
-    """Deterministic IVF coarse quantizer: the ``n_cells`` corpus
+def seed_centroids(embeddings: DataFrame) -> DataFrame:
+    """Deterministic IVF coarse quantizer: the ``IVF_CELLS`` corpus
     vectors with the smallest ids become the cell centroids
     (``cell_id`` densely numbered in id order).  A stand-in for a
     KMeans fit (:func:`train_centroids_kmeans`) that keeps the whole
     index reproducible and oracle-checkable; the downstream plan —
     broadcast centroids, cell equi-join — is identical either way."""
-    # The centroid table is n_cells rows BY CONSTRUCTION and its only
+    # The centroid table is IVF_CELLS rows BY CONSTRUCTION and its only
     # consumers broadcast it, so materialize it on the driver (exactly
     # like train_centroids_kmeans does): one bounded TakeOrdered
     # collect, then a literal frame.  Keeping it lazy planted a
@@ -916,7 +909,7 @@ def seed_centroids(embeddings: DataFrame, n_cells: int = 8) -> DataFrame:
         embeddings.filter(finite_vec("embedding"))
         .select("vec_id", "embedding")
         .orderBy("vec_id")
-        .limit(n_cells)
+        .limit(IVF_CELLS)
         .collect()
     )
     spark = embeddings.sparkSession
@@ -1002,14 +995,11 @@ def _assign_cells_literal(
 def top_k_ann_ivf(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 8,
-    n_probe: int = 2,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-style approximate top-k: coarse-quantize the corpus into
-    ``n_cells`` inverted lists, probe only the ``n_probe`` cells
-    nearest each query.
+    """IVF-style approximate top-``TOP_K``: coarse-quantize the corpus
+    into ``IVF_CELLS`` inverted lists, probe only the ``IVF_PROBE``
+    cells nearest each query.
 
     Complements :func:`top_k_ann_signlsh`: LSH buckets are oblivious
     (no training, bucket count fixed by plane count); IVF adapts cells
@@ -1026,29 +1016,25 @@ def top_k_ann_ivf(
     measured 1.9× slower at sf0.1."""
     corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
     # Deterministic seed quantizer unless centroids are given: the
-    # n_cells smallest-id vectors (bounded TakeOrdered collect,
+    # IVF_CELLS smallest-id vectors (bounded TakeOrdered collect,
     # materializes the staged corpus).
-    cent_rows = _coarse_rows(corpus, n_cells, centroids)
+    cent_rows = _coarse_rows(corpus, centroids)
     assigned = _assign_cells_literal(corpus, cent_rows)
     probes = _probe_frame(
-        queries, cent_rows, n_probe, "query_id", "query_vec"
+        queries, cent_rows, IVF_PROBE, "query_id", "query_vec"
     )
     scored = assigned.join(F.broadcast(probes), on="cell_id").withColumn(
         "__cos", dot("__v", "__q") / (F.col("__n") * F.col("__qn"))
     )
     # cell-bounded candidates — skip the salted prune (see
     # _raw_ranker; the prune is exact either way, this is perf)
-    return _rank_top_k(scored, k, "query_id", "vec_id", prune_salt=1)
+    return _rank_top_k(scored, TOP_K, "query_id", "vec_id", prune_salt=1)
 
 
 def top_k_ann_ivf_multidial(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_cells: int,
-    probes: Sequence[int],
+    embeddings: DataFrame, queries: DataFrame
 ) -> list[tuple[int, DataFrame]]:
-    """:func:`top_k_ann_ivf` swept over several ``n_probe`` dials from
+    """:func:`top_k_ann_ivf` swept over the ``RECALL_PROBES`` dials from
     ONE corpus pass (r15 opt, the recall-profile shape): the cell
     assignment, the probe ranking, and the candidate cosine scoring
     run once at the WIDEST dial, and each dial's result is a filter of
@@ -1060,12 +1046,12 @@ def top_k_ann_ivf_multidial(
     expression, same ``_rank_top_k`` tie-break — pinned in
     tests/test_llm.py's recall-profile checks), but the corpus is
     assigned and scored once instead of ``len(probes)`` times.
-    Returns ``[(p, top_k_frame), ...]`` in the given dial order."""
+    Returns ``[(p, top_k_frame), ...]`` in dial order."""
     corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
-    cent_rows = _seed_centroid_rows(corpus, "vec_id", n_cells)
+    cent_rows = _seed_centroid_rows(corpus, "vec_id", IVF_CELLS)
     assigned = _assign_cells_literal(corpus, cent_rows)
     probes_ranked = _probe_frame(
-        queries, cent_rows, max(probes), "query_id", "query_vec",
+        queries, cent_rows, max(RECALL_PROBES), "query_id", "query_vec",
         rank_col="__pr",
     )
     # score once at the widest dial; project to the rank inputs before
@@ -1084,17 +1070,17 @@ def top_k_ann_ivf_multidial(
             p,
             _rank_top_k(
                 scored.filter(F.col("__pr") <= p).drop("__pr"),
-                k,
+                TOP_K,
                 "query_id",
                 "vec_id",
                 prune_salt=1,
             ),
         )
-        for p in probes
+        for p in RECALL_PROBES
     ]
 
 
-def train_centroids_kmeans(embeddings: DataFrame, n_cells: int = 8) -> DataFrame:
+def train_centroids_kmeans(embeddings: DataFrame) -> DataFrame:
     """Production coarse quantizer: fit KMeans (pyspark.ml — Lloyd
     iterations run distributed) and return centroids in the same
     ``(cell_id, __c)`` shape the IVF builders take.  Not
@@ -1106,19 +1092,11 @@ def train_centroids_kmeans(embeddings: DataFrame, n_cells: int = 8) -> DataFrame
     feats = embeddings.select(
         array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
-    model = KMeans(k=n_cells, seed=42, maxIter=10).fit(feats)
+    model = KMeans(k=IVF_CELLS, seed=42, maxIter=10).fit(feats)
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
     return spark.createDataFrame(rows, "cell_id int, __c array<double>")
-
-
-def normalize(vec: Column | str) -> Column:
-    """L2-normalize an array column (zero vectors pass through as-is to
-    avoid division by zero)."""
-    v = _col(vec)
-    n = norm(v)
-    return F.when(n == 0, v).otherwise(F.transform(v, lambda x: x / n))
 
 
 def centroid_distances(embeddings: DataFrame) -> DataFrame:
@@ -1456,8 +1434,6 @@ def _pq_codes_expr(
 def top_k_ann_ivfpq(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 8,
     n_probe: int = 2,
     rerank: int = 4,
     centroids: DataFrame | None = None,
@@ -1470,7 +1446,7 @@ def top_k_ann_ivfpq(
 
     Index side (what a 100 TB deployment would persist):
 
-    - coarse quantizer: ``n_cells`` centroids; every corpus vector
+    - coarse quantizer: ``IVF_CELLS`` centroids; every corpus vector
       stores its ``cell_id`` (:func:`_assign_cells_literal`),
     - PQ codes of the RESIDUAL ``v − centroid(cell)`` — 4 codes of
       ``log2(16)`` bits each (4×4 = 16 bits/vector vs
@@ -1490,7 +1466,7 @@ def top_k_ann_ivfpq(
     — no vector arithmetic against the corpus at all (the corpus side
     reads 16-bit codes, not 256-byte vectors: at 1000 executors the
     scan is ~100× lighter than bruteforce even before cell pruning).
-    The top ``rerank·k`` candidates per query then join back to the
+    The top ``rerank·TOP_K`` candidates per query then join back to the
     staged corpus BY ID for exact-cosine re-ranking, so the final
     ordering is exact over the candidate set and recall is governed by
     (``n_probe``, ``rerank``) — the standard two-dial trade.
@@ -1499,15 +1475,14 @@ def top_k_ann_ivfpq(
     recall@k vs :func:`top_k_bruteforce` is pinned by unit tests.
     """
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, centroids, codebooks
+        embeddings, queries, n_probe, centroids, codebooks
     )
-    return _adc_rank_joined(cand, corpus, k, rerank, "vec_id", "query_id")
+    return _adc_rank_joined(cand, corpus, TOP_K, rerank, "vec_id", "query_id")
 
 
 def _ivfpq_in_memory(
     embeddings: DataFrame,
     queries: DataFrame,
-    n_cells: int,
     n_probe: int,
     centroids: DataFrame | None,
     codebooks: DataFrame | None,
@@ -1519,7 +1494,7 @@ def _ivfpq_in_memory(
     # Staged: the corpus projection has two consumers (PQ encode, exact
     # re-rank by id); the registry releases it after materialization.
     corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
-    cent_rows = _coarse_rows(corpus, n_cells, centroids)
+    cent_rows = _coarse_rows(corpus, centroids)
     assigned = _assign_cells_literal(corpus, cent_rows)
     # Residual frame: v − centroid(cell) (:func:`_residual_frame` —
     # one literal array-of-arrays lookup, no join).  STAGED: its
@@ -1653,29 +1628,26 @@ def _adc_rank_joined(
 def top_k_ann_ivfpq_multirerank(
     embeddings: DataFrame,
     queries: DataFrame,
-    k: int,
-    reranks: Sequence[int],
-    n_cells: int = 8,
-    n_probe: int = 2,
     centroids: DataFrame | None = None,
     codebooks: DataFrame | None = None,
 ) -> list[tuple[int, DataFrame]]:
-    """:func:`top_k_ann_ivfpq` swept over several ``rerank`` dials
+    """:func:`top_k_ann_ivfpq` at ``IVF_PROBE`` swept over the
+    ``PQ_RECALL_RERANK`` dials
     from ONE encode + ADC + exact-re-rank pass (r15 opt, the
     PQ-recall-profile shape; the ``rerank`` analogue of
     :func:`top_k_ann_ivf_multidial`): the ADC candidate rank ``__crk``
     is computed once, the exact re-rank join runs once at the WIDEST
-    cut, and dial ``r`` keeps the candidates with ``__crk ≤ r·k`` — a
+    cut, and dial ``r`` keeps the candidates with ``__crk ≤ r·TOP_K`` — a
     PREFIX of the widest cut under the identical (approx DESC, id)
     window order, so every dial's rows equal the independent
     :func:`top_k_ann_ivfpq` call's (same ADC table, same cosine, same
     final tie-break).  Returns ``[(r, top_k_frame), ...]``."""
     corpus, cand = _ivfpq_in_memory(
-        embeddings, queries, n_cells, n_probe, centroids, codebooks
+        embeddings, queries, IVF_PROBE, centroids, codebooks
     )
     # _adc_rank_joined's epilogue at the widest cut, keeping __crk
     candidates = _adc_candidates(
-        cand, max(reranks) * k, "vec_id", "query_id"
+        cand, max(PQ_RECALL_RERANK) * TOP_K, "vec_id", "query_id"
     )
     rer = stage(
         candidates.join(corpus, on="vec_id").withColumn(
@@ -1687,13 +1659,13 @@ def top_k_ann_ivfpq_multirerank(
         (
             r,
             _rank_top_k(
-                rer.filter(F.col("__crk") <= r * k),
-                k,
+                rer.filter(F.col("__crk") <= r * TOP_K),
+                TOP_K,
                 "query_id",
                 "vec_id",
             ),
         )
-        for r in reranks
+        for r in PQ_RECALL_RERANK
     ]
 
 
@@ -1713,10 +1685,7 @@ def _residual_frame(
     )
 
 
-def train_ivfpq_params(
-    embeddings: DataFrame,
-    n_cells: int = 8,
-) -> tuple[DataFrame, DataFrame]:
+def train_ivfpq_params(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Train the IVF-PQ quantizer ONCE — ``(centroids, codebooks)``
     DataFrames for reuse across multiple :func:`top_k_ann_ivfpq`
     calls (both are bounded local relations: seeded centroid rows and
@@ -1726,7 +1695,7 @@ def train_ivfpq_params(
     its wall clock in redundant trainings)."""
     spark = embeddings.sparkSession
     corpus = stage(_vector_corpus(embeddings, "vec_id", "embedding"))
-    cent_rows = _seed_centroid_rows(corpus, "vec_id", n_cells)
+    cent_rows = _seed_centroid_rows(corpus, "vec_id", IVF_CELLS)
     resid = _residual_frame(
         _assign_cells_literal(corpus, cent_rows), cent_rows, "vec_id"
     )
@@ -2485,9 +2454,6 @@ def search_ivf_index_filtered(
     spark,
     path: str,
     queries: DataFrame,
-    where: str,
-    k: int = 5,
-    n_probe: int = 2,
     params: IndexParams | None = None,
 ) -> DataFrame:
     """FILTERED top-k over a persisted IVF index — the
@@ -2497,10 +2463,11 @@ def search_ivf_index_filtered(
     form; at 100 TB the filter must ride the index).
 
     Semantics (PRE-filter, k-guaranteed): per query, the effective
-    probe count is the FIRST rung of :func:`probe_ladder` whose top-p
-    cells contain ≥ k corpus vectors satisfying ``where`` (else the
-    final probe-everything rung), and the result is the exact cosine
-    top-k over the filtered vectors in those cells.  This is the
+    probe count is the FIRST rung of :func:`probe_ladder` (from
+    ``IVF_PROBE``) whose top-p cells contain ≥ ``TOP_K`` corpus vectors
+    satisfying ``FILTERED_ANN_PRED`` (else the final probe-everything
+    rung), and the result is the exact cosine top-``TOP_K`` over the
+    filtered vectors in those cells.  This is the
     recall contract vector stores document for filtered search: a
     selective predicate can starve the probed cells, so the search
     widens deterministically rather than returning < k rows.
@@ -2515,7 +2482,7 @@ def search_ivf_index_filtered(
     widening loop runs at most ``log2(n_cells/n_probe)+1`` rungs.
     """
     return _search(
-        _RAW, spark, path, queries, params, where, k, n_probe, 0, "vec_id"
+        _RAW, spark, path, queries, params, FILTERED_ANN_PRED, TOP_K, IVF_PROBE, 0, "vec_id"
     )
 
 
@@ -2548,9 +2515,6 @@ def search_ivfpq_index_filtered(
     spark,
     path: str,
     queries: DataFrame,
-    where: str,
-    k: int = 5,
-    n_probe: int = 2,
     params: IndexParams | None = None,
 ) -> DataFrame:
     """FILTERED top-k over the persisted IVF-PQ index (r14, the
@@ -2562,8 +2526,9 @@ def search_ivfpq_index_filtered(
     Semantics compose :func:`search_ivf_index_filtered`'s recall
     contract with :func:`search_ivfpq_index`'s ADC pipeline: per
     query the effective probe count is the FIRST
-    :func:`probe_ladder` rung whose top-p cells hold ≥ k CODE rows
-    satisfying ``where`` (else the final probe-everything rung) — the
+    :func:`probe_ladder` rung whose top-p cells hold ≥ ``TOP_K`` CODE
+    rows satisfying ``FILTERED_ANN_PRED`` (else the final
+    probe-everything rung) — the
     ladder is re-derived from the FILTERED cell populations, so a
     selective predicate widens the probe instead of starving the
     result below k.  Within the chosen rung: ADC approximate scoring
@@ -2580,5 +2545,5 @@ def search_ivfpq_index_filtered(
     bounded ≤|Q|-row collect off the staged code×probe join (shared
     with the ranking — the join is staged once per rung)."""
     return _search(
-        _PQ, spark, path, queries, params, where, k, n_probe, 4, "vec_id"
+        _PQ, spark, path, queries, params, FILTERED_ANN_PRED, TOP_K, IVF_PROBE, 4, "vec_id"
     )

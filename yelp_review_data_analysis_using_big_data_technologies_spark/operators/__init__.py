@@ -7,18 +7,14 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.inter
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.range_join import range_join
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.reconcile import diff_summary, table_diff
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relational import (
-    anti_join,
     dedup,
     drop_nulls,
     duplicate_rows,
     equi_join,
     rename_columns,
-    semi_join,
-    top_k,
 )
 
 __all__ = [
-    "anti_join",
     "asof_join",
     "bloom_pruned_join",
     "build_bloom",
@@ -35,6 +31,4 @@ __all__ = [
     "duplicate_rows",
     "equi_join",
     "rename_columns",
-    "semi_join",
-    "top_k",
 ]

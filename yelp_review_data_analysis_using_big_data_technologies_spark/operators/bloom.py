@@ -13,13 +13,13 @@ non-matching fact rows BEFORE they pay shuffle I/O.
 
 The build is fully distributed — no key list ever reaches the driver:
 
-1. per dimension key, ``num_hashes`` bit positions via double hashing
+1. per dimension key, ``NUM_HASHES`` bit positions via double hashing
    (Kirsch–Mitzenmacher 2006): ``g_i = h1 + i*h2 mod m`` with
    ``h1 = xxhash64(key)`` and ``h2`` an odd murmur3 step (odd ⇒ coprime
    with the power-of-two ``m``, so the stride never degenerates);
 2. positions fold into 64-bit words with a ``bit_or`` partial aggregate
    (map-side combine; the shuffle carries at most
-   ``min(num_hashes·|dim|, num_bits)`` distinct positions);
+   ``min(NUM_HASHES·|dim|, num_bits)`` distinct positions);
 3. the sketch is ONE row — a DENSE ``array<bigint>`` of exactly
    ``num_bits/64`` words (1 MiB at the default 2^23 bits) —
    broadcast onto the fact scan as a bounded 1-row relation.
@@ -27,7 +27,7 @@ The build is fully distributed — no key list ever reaches the driver:
 The dense array is load-bearing, not cosmetic: Spark's ``element_at``
 on a MAP column is a LINEAR SCAN of the entries (ArrayBasedMapData has
 no hash index), so a map-shaped sketch costs
-``num_hashes × num_words`` comparisons PER FACT ROW — measured as a
+``NUM_HASHES × num_words`` comparisons PER FACT ROW — measured as a
 multi-minute stall at 20M rows that the array's O(1) ordinal access
 reduces to milliseconds.  The zero-fill is a range left-join (W rows,
 broadcast), never a per-element map probe.
@@ -53,19 +53,18 @@ from pyspark.sql import functions as F
 #: internal column names on the 1-row sketch relation
 _WORDS = "__bf_words"
 _NBITS = "__bf_num_bits"
-_NHASH = "__bf_num_hashes"
-_SKETCH_COLS = (_WORDS, _NBITS, _NHASH)
+_SKETCH_COLS = (_WORDS, _NBITS)
 
 DEFAULT_NUM_BITS = 1 << 23
-DEFAULT_NUM_HASHES = 5
+NUM_HASHES = 5
 
 
-def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
-    """The ``num_hashes`` bit positions for one key.
+def _positions(key: Column, num_bits: int) -> list[Column]:
+    """The ``NUM_HASHES`` bit positions for one key.
 
     ``pmod`` runs BEFORE the ``h1 + i·h2`` sum: both operands drop
     under ``num_bits`` first, so the largest intermediate is
-    ``(num_hashes+1)·num_bits`` — nowhere near BIGINT range, which
+    ``(NUM_HASHES+1)·num_bits`` — nowhere near BIGINT range, which
     under ANSI mode would abort the job on overflow (the r8
     extreme-magnitude lesson applied at design time).
     """
@@ -75,19 +74,13 @@ def _positions(key: Column, num_bits: int, num_hashes: int) -> list[Column]:
     # odd ⇒ coprime with the power-of-two m, the stride never collapses
     h2 = F.pmod(F.hash(key).cast("bigint") * F.lit(2) + F.lit(1), m)
     return [
-        F.pmod(h1 + F.lit(i).cast("bigint") * h2, m) for i in range(num_hashes)
+        F.pmod(h1 + F.lit(i).cast("bigint") * h2, m) for i in range(NUM_HASHES)
     ]
 
 
-def build_bloom(
-    dim: DataFrame,
-    key: str,
-    *,
-    num_bits: int = DEFAULT_NUM_BITS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-) -> DataFrame:
+def build_bloom(dim: DataFrame, *, num_bits: int = DEFAULT_NUM_BITS) -> DataFrame:
     """One-row sketch relation ``(words array<bigint> of exactly
-    num_bits/64 words, num_bits, num_hashes)`` over ``dim[key]``.
+    num_bits/64 words, num_bits)`` over ``dim["s_suppkey"]``.
 
     NULL keys are skipped — NULL never equi-matches, so setting bits
     for them would only add false positives.  The sketch is a plain
@@ -97,11 +90,9 @@ def build_bloom(
     """
     if not (num_bits >= 64 and (num_bits & (num_bits - 1)) == 0):
         raise ValueError(f"num_bits must be a power of two >= 64: {num_bits}")
-    if num_hashes < 1:
-        raise ValueError(f"num_hashes must be >= 1: {num_hashes}")
-    k = F.col(key)
+    k = F.col("s_suppkey")
     num_words = num_bits // 64
-    pos = F.explode(F.array(*_positions(k, num_bits, num_hashes))).alias("__pos")
+    pos = F.explode(F.array(*_positions(k, num_bits))).alias("__pos")
     words = (
         dim.where(k.isNotNull())
         .select(pos)
@@ -132,19 +123,14 @@ def build_bloom(
             lambda s: s["__word"],
         ).alias(_WORDS),
         F.lit(num_bits).alias(_NBITS),
-        F.lit(num_hashes).alias(_NHASH),
     )
 
 
 def bloom_prune(
-    fact: DataFrame,
-    fact_key: str,
-    sketch: DataFrame,
-    *,
-    num_bits: int | None = None,
-    num_hashes: int | None = None,
+    fact: DataFrame, sketch: DataFrame, *, num_bits: int | None = None
 ) -> DataFrame:
-    """Filter ``fact`` to rows whose key might be in the sketch.
+    """Filter ``fact`` to rows whose ``l_suppkey`` might be in the
+    sketch.
 
     The 1-row sketch broadcast is a bounded BroadcastNestedLoopJoin by
     construction (same class as the whitelisted 1-row aggregate tiles).
@@ -158,42 +144,37 @@ def bloom_prune(
     stays JVM-side inside whole-stage codegen.
 
     Probe parameters are the SKETCH'S: bit positions must be derived
-    with the exact ``num_bits``/``num_hashes`` the sketch was built
-    with, or matching fact rows silently vanish — the one failure mode
-    a Bloom prune promises never to have.  Both are ALWAYS read from
-    the ``_NBITS``/``_NHASH`` columns the sketch row carries (a
-    bounded 1-row lookup — for a parquet-persisted sketch this is a
-    footer-sized read); values a caller passes (e.g.
+    with the exact ``num_bits`` the sketch was built with, or matching
+    fact rows silently vanish — the one failure mode a Bloom prune
+    promises never to have.  It is ALWAYS read from the ``_NBITS``
+    column the sketch row carries (a bounded 1-row lookup — for a
+    parquet-persisted sketch this is a footer-sized read); a value a
+    caller passes (e.g.
     ``bloom_pruned_join``, which built the sketch in the same plan)
-    are validated eagerly on the driver against the sketch's own
-    columns, and a mismatch raises before any plan executes.  Driver
+    is validated eagerly on the driver against the sketch's own
+    column, and a mismatch raises before any plan executes.  Driver
     validation is robust where a codegen-level row guard is not: the
     optimizer may reorder or split an AND chain, under which a
     ``raise_error`` conjunct could be evaluated after — or never,
     when the probe conjuncts already rejected the row — and
     mismatched params would silently drop matching fact rows.
     """
-    # bounded: the sketch is one row; only the two int params are
-    # fetched (the word array is not selected)
-    params = sketch.select(_NBITS, _NHASH).first()
+    # bounded: the sketch is one row; only the int param is fetched
+    # (the word array is not selected)
+    params = sketch.select(_NBITS).first()
     if params is None:
         raise ValueError("sketch relation is empty — not a built sketch")
-    sketch_bits, sketch_hashes = int(params[0]), int(params[1])
+    sketch_bits = int(params[0])
     if num_bits is not None and num_bits != sketch_bits:
         raise ValueError(
             f"bloom_prune params do not match the sketch: passed "
             f"num_bits={num_bits}, sketch has num_bits={sketch_bits}"
         )
-    if num_hashes is not None and num_hashes != sketch_hashes:
-        raise ValueError(
-            f"bloom_prune params do not match the sketch: passed "
-            f"num_hashes={num_hashes}, sketch has num_hashes={sketch_hashes}"
-        )
-    num_bits, num_hashes = sketch_bits, sketch_hashes
-    k = F.col(fact_key)
+    num_bits = sketch_bits
+    k = F.col("l_suppkey")
     tmp = fact.join(F.broadcast(sketch))
     pos_names: list[str] = []
-    for i, p in enumerate(_positions(k, num_bits, num_hashes)):
+    for i, p in enumerate(_positions(k, num_bits)):
         name = f"__bf_pos_{i}"
         tmp = tmp.withColumn(name, p)
         pos_names.append(name)
@@ -214,15 +195,10 @@ def bloom_prune(
 
 
 def bloom_pruned_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    *,
-    fact_key: str,
-    dim_key: str,
-    num_bits: int = DEFAULT_NUM_BITS,
-    num_hashes: int = DEFAULT_NUM_HASHES,
+    fact: DataFrame, dim: DataFrame, *, num_bits: int = DEFAULT_NUM_BITS
 ) -> DataFrame:
-    """Inner ``fact ⋈ dim`` with a Bloom pre-filter on the fact side:
+    """Inner ``fact ⋈ dim`` on ``l_suppkey = s_suppkey`` with a Bloom
+    pre-filter on the fact side:
     dropping fact rows that provably cannot match preserves the inner
     join exactly (no false negatives).  An outer flavor would lose
     null-extended rows, so none is offered.
@@ -234,10 +210,6 @@ def bloom_pruned_join(
     # param validation (a 1-row .first()) and the broadcast at join
     # execution.  Unstaged, the dim aggregate ran twice; persisting
     # the 1-row sketch makes the validation lookup free.
-    sketch = stage(
-        build_bloom(dim, dim_key, num_bits=num_bits, num_hashes=num_hashes)
-    )
-    pruned = bloom_prune(
-        fact, fact_key, sketch, num_bits=num_bits, num_hashes=num_hashes
-    )
-    return pruned.join(dim, pruned[fact_key] == dim[dim_key], "inner")
+    sketch = stage(build_bloom(dim, num_bits=num_bits))
+    pruned = bloom_prune(fact, sketch, num_bits=num_bits)
+    return pruned.join(dim, pruned["l_suppkey"] == dim["s_suppkey"], "inner")

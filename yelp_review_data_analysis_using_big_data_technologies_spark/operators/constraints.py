@@ -79,10 +79,10 @@ def accepted_values_violations(
     )
 
 
-def not_null_violations(df: DataFrame, col: str, rule: str) -> DataFrame:
-    """NULL rows in ``col``."""
-    return df.filter(F.col(col).isNull()).agg(
-        F.lit(rule).alias("rule"),
+def not_null_violations(customer: DataFrame) -> DataFrame:
+    """NULL rows in ``customer.c_name``."""
+    return customer.filter(F.col("c_name").isNull()).agg(
+        F.lit("not_null:customer.c_name").alias("rule"),
         F.count(F.lit(1)).cast("bigint").alias("violations"),
     )
 

@@ -23,31 +23,29 @@ outputs are rounded to 6 dp like every float contract in this repo.
 from __future__ import annotations
 
 import math
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def decay_weight(ts_col: Column | str, anchor_us: Column, half_life_s: float) -> Column:
-    """Weight ``2^(-(anchor - t)/half_life)`` for one event — 1.0 at
-    the anchor, 0.5 one half-life earlier.  Future events (t > anchor)
-    would amplify instead of decay; they are the caller's watermark
-    problem and weigh > 1 here by design (visible, not clamped)."""
-    c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
-    # cast: the parquet loader yields TIMESTAMP_NTZ, which unix_micros
-    # rejects; the session is pinned UTC so the cast is value-exact
-    dt_us = anchor_us - F.unix_micros(c.cast("timestamp"))
-    rate = math.log(0.5) / (half_life_s * 1_000_000.0)
-    return F.exp(dt_us.cast("double") * F.lit(rate))
 
 
 #: EWMA half-life of :func:`ewma_by_key` and its twin: one week.
 HALF_LIFE_S = 7 * 24 * 3600.0
 
 
-def ewma_by_key(events: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Per-key EWMA of ``value`` (half-life ``HALF_LIFE_S``) anchored at the table's max
+def decay_weight(anchor_us: Column) -> Column:
+    """Weight ``2^(-(anchor - ts)/HALF_LIFE_S)`` for one event — 1.0
+    at the anchor, 0.5 one half-life earlier.  Future events (t > anchor)
+    would amplify instead of decay; they are the caller's watermark
+    problem and weigh > 1 here by design (visible, not clamped)."""
+    # cast: the parquet loader yields TIMESTAMP_NTZ, which unix_micros
+    # rejects; the session is pinned UTC so the cast is value-exact
+    dt_us = anchor_us - F.unix_micros(F.col("ts").cast("timestamp"))
+    rate = math.log(0.5) / (HALF_LIFE_S * 1_000_000.0)
+    return F.exp(dt_us.cast("double") * F.lit(rate))
+
+
+def ewma_by_key(events: DataFrame) -> DataFrame:
+    """Per-``event_type`` EWMA of ``value`` (half-life ``HALF_LIFE_S``) anchored at the table's max
     ``ts`` (the "now" of the dataset), plus the plain average for
     contrast and the effective sample size ``(Σw)²/Σw²`` (how many
     "fully-weighted" events the decayed estimate is worth — the
@@ -66,7 +64,8 @@ def ewma_by_key(events: DataFrame, keys: Sequence[str]) -> DataFrame:
             "__anchor_us"
         )
     )
-    w = decay_weight("ts", F.col("__anchor_us"), HALF_LIFE_S)
+    keys = ["event_type"]
+    w = decay_weight(F.col("__anchor_us"))
     v = F.col("value")
     valid = v.isNotNull() & F.col("ts").isNotNull()
     weighted = events.join(F.broadcast(anchor)).select(

@@ -68,13 +68,21 @@ PSI_BUCKETS = 10
 #: Value buckets of the KS two-level prefix sum.
 KS_BUCKETS = 32
 
+#: Snapshot split of the drift entries and their twins: the events
+#: table spans Jan 2024, so the reference window is the first half
+#: and the "current" window the second.  NULL timestamps fall out of
+#: BOTH sides (no drift signal without a time).
+DRIFT_SPLIT = "2024-01-16 00:00:00"
+DRIFT_REF_SQL = f"SELECT * FROM events WHERE ts < TIMESTAMP '{DRIFT_SPLIT}'"
+DRIFT_CUR_SQL = f"SELECT * FROM events WHERE ts >= TIMESTAMP '{DRIFT_SPLIT}'"
 
-def psi_profile_sql(ref_sql: str, cur_sql: str) -> str:
+
+def psi_profile_sql(cur_sql: str) -> str:
     """DuckDB twin of :func:`psi_profile_frozen` over
-    :func:`psi_freeze_reference` — same reference-quantile
-    edges (``quantile_cont`` ≡ Spark ``percentile``), same
-    comparison-sum bucket rule, same smoothing, same decimal-summed
-    total.  ``ref_sql``/``cur_sql`` are subqueries projecting
+    :func:`psi_freeze_reference` of ``DRIFT_REF_SQL`` — same
+    reference-quantile edges (``quantile_cont`` ≡ Spark
+    ``percentile``), same comparison-sum bucket rule, same smoothing,
+    same decimal-summed total.  ``cur_sql`` is a subquery projecting
     ``value``."""
     edges = ",\n         ".join(
         f"quantile_cont(__v, {i / PSI_BUCKETS:.17g}) AS __e{i}"
@@ -86,7 +94,7 @@ def psi_profile_sql(ref_sql: str, cur_sql: str) -> str:
     half = PSI_BUCKETS / 2.0
     return f"""
 WITH r AS (
-  SELECT value AS __v FROM ({ref_sql})
+  SELECT value AS __v FROM ({DRIFT_REF_SQL})
   WHERE value IS NOT NULL AND isfinite(value)
 ), c AS (
   SELECT value AS __v FROM ({cur_sql})
@@ -384,8 +392,9 @@ def ks_2sample(a_counts: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def ks_2sample_sql(a_sql: str, b_sql: str) -> str:
-    """DuckDB twin of :func:`ks_2sample` over both raw sides — the
+def ks_2sample_sql(b_sql: str) -> str:
+    """DuckDB twin of :func:`ks_2sample` over the raw ``DRIFT_REF_SQL``
+    and ``b_sql`` sides — the
     NAIVE single-window CDF formulation the two-level decomposition
     must equal (HUGEINT
     cross-products play the DECIMAL(38,0) role)."""
@@ -393,7 +402,7 @@ def ks_2sample_sql(a_sql: str, b_sql: str) -> str:
 WITH counts AS (
   SELECT __v, CAST(sum(__a) AS BIGINT) AS __an, CAST(sum(__b) AS BIGINT) AS __bn
   FROM (
-    SELECT value AS __v, 1 AS __a, 0 AS __b FROM ({a_sql})
+    SELECT value AS __v, 1 AS __a, 0 AS __b FROM ({DRIFT_REF_SQL})
     WHERE value IS NOT NULL AND isfinite(value)
     UNION ALL
     SELECT value AS __v, 0 AS __a, 1 AS __b FROM ({b_sql})
@@ -509,13 +518,13 @@ def chi2_drift_frozen(cur: DataFrame, frozen: dict) -> DataFrame:
     )
 
 
-def chi2_drift_sql(ref_sql: str, cur_sql: str) -> str:
+def chi2_drift_sql(cur_sql: str) -> str:
     """DuckDB twin of :func:`chi2_drift_frozen` over
-    :func:`chi2_freeze_reference` — same margins, same
+    :func:`chi2_freeze_reference` of ``DRIFT_REF_SQL`` — same margins, same
     zero-expectation guard, same decimal-summed total."""
     return f"""
 WITH tagged AS (
-  SELECT event_type AS category, 1 AS __r, 0 AS __c FROM ({ref_sql})
+  SELECT event_type AS category, 1 AS __r, 0 AS __c FROM ({DRIFT_REF_SQL})
   WHERE event_type IS NOT NULL
   UNION ALL
   SELECT event_type AS category, 0 AS __r, 1 AS __c FROM ({cur_sql})

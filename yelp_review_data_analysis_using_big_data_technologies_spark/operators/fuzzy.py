@@ -30,15 +30,13 @@ from pyspark.sql import functions as F
 
 
 def fuzzy_pairs_sorted_neighborhood(
-    df: DataFrame,
-    id_col: str,
-    key_col: str,
-    block_col: Column | str | None = None,
+    df: DataFrame, block_col: Column | str | None = None
 ) -> DataFrame:
-    """Pairs ``(id_a, id_b, distance)`` with edit distance ≤ 1 among
-    rows within 3 positions in
-    ``key_col``'s sort order inside each block (ties broken by id —
-    deterministic for unique (key, id))."""
+    """Pairs ``(id_a, id_b, distance)`` of ``c_custkey`` ids with
+    edit distance ≤ 1 among rows within 3 positions in ``c_name``'s
+    sort order inside each block (ties broken by id — deterministic
+    for unique (key, id))."""
+    id_col, key_col = "c_custkey", "c_name"
     # NULLS FIRST explicitly on both sort keys: Spark's ASC default,
     # but the SQL twin must pin the same (DuckDB defaults NULLS LAST),
     # else a NULL id tie-breaking among duplicate keys lands on the
@@ -48,8 +46,8 @@ def fuzzy_pairs_sorted_neighborhood(
         blk = F.col(block_col) if isinstance(block_col, str) else block_col
         # project the block expression IN the same select that narrows
         # the frame — narrowing first would drop any OTHER column the
-        # block expression references (e.g. block_col="zip" with
-        # key_col="name", the docstring's own suggested use)
+        # block expression references (e.g. block_col="zip", the
+        # docstring's own suggested use)
         base = df.select(F.col(id_col), F.col(key_col), blk.alias("__blk"))
         w = Window.partitionBy("__blk").orderBy(*order)
     else:
@@ -80,25 +78,19 @@ def fuzzy_pairs_sorted_neighborhood(
     )
 
 
-def fuzzy_pairs_sql(
-    table: str,
-    id_col: str,
-    key_col: str,
-    block_expr: str | None = None,
-) -> str:
-    """DuckDB twin at the default 3-row window: the same blocked
-    lead() neighborhood and
-    levenshtein verify (same input contract and the same pinned
-    NULLS FIRST sort as the Spark side)."""
-    part = f"PARTITION BY {block_expr} " if block_expr else ""
+def fuzzy_pairs_sql() -> str:
+    """DuckDB twin over ``customer`` blocked on the 14-char
+    ``c_name`` prefix, at the 3-row window: the same blocked lead()
+    neighborhood and levenshtein verify (same input contract and the
+    same pinned NULLS FIRST sort as the Spark side)."""
     # distinct window names per branch: DuckDB rejects re-defining the
     # same WINDOW alias across UNION ALL branches of one query
     leads = " UNION ALL ".join(
-        f"SELECT {id_col} AS id_a, {key_col} AS k_a, "
-        f"lead({id_col}, {i}) OVER w{i} AS id_b, "
-        f"lead({key_col}, {i}) OVER w{i} AS k_b "
-        f"FROM {table} WINDOW w{i} AS ({part}ORDER BY "
-        f"{key_col} NULLS FIRST, {id_col} NULLS FIRST)"
+        f"SELECT c_custkey AS id_a, c_name AS k_a, "
+        f"lead(c_custkey, {i}) OVER w{i} AS id_b, "
+        f"lead(c_name, {i}) OVER w{i} AS k_b "
+        f"FROM customer WINDOW w{i} AS (PARTITION BY substr(c_name, 1, 14) "
+        f"ORDER BY c_name NULLS FIRST, c_custkey NULLS FIRST)"
         for i in range(1, 4)
     )
     return (

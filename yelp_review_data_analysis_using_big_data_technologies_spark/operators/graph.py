@@ -345,7 +345,7 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts_sql(pairs_sql: str, id_out: str = "id") -> str:
+def triangle_counts_sql(pairs_sql: str) -> str:
     """DuckDB twin of :func:`triangle_counts` — identical
     canonicalize → wedge → close → credit-3-corners pipeline."""
     return f"""
@@ -371,20 +371,19 @@ deg AS (
   FROM (SELECT a AS id FROM canon UNION ALL SELECT b FROM canon)
   GROUP BY id
 )
-SELECT deg.id AS {id_out}, deg.degree,
+SELECT deg.id AS doc_id, deg.degree,
        coalesce(per_node.triangles, 0) AS triangles,
        CASE WHEN deg.degree >= 2
             THEN round(coalesce(per_node.triangles, 0) * 2.0
                        / (deg.degree * (deg.degree - 1)), 6)
             ELSE 0.0 END AS clustering
 FROM deg LEFT JOIN per_node USING (id)
-ORDER BY {id_out}
+ORDER BY doc_id
 """
 
 
 def pagerank_sql(
     pairs_sql: str,
-    id_out: str = "id",
     weight: str | None = None,
 ) -> str:
     """DuckDB twin of :func:`pagerank`: the SAME K update steps
@@ -454,9 +453,9 @@ deg AS ({deg}),
 n AS (SELECT count(*) AS n FROM deg),
 r0 AS (SELECT id, 1.0 / (SELECT n FROM n) AS r FROM deg),
 {chain}
-SELECT deg.id AS {id_out}, deg.degree, round(r{ITERATIONS}.r, 6) AS rank
+SELECT deg.id AS doc_id, deg.degree, round(r{ITERATIONS}.r, 6) AS rank
 FROM deg JOIN r{ITERATIONS} ON deg.id = r{ITERATIONS}.id
-ORDER BY rank DESC, {id_out} ASC
+ORDER BY rank DESC, doc_id ASC
 """
 
 
@@ -523,7 +522,7 @@ def k_core(pairs: DataFrame) -> DataFrame:
     )
 
 
-def k_core_sql(pairs_sql: str, id_out: str = "id") -> str:
+def k_core_sql(pairs_sql: str) -> str:
     """DuckDB twin of :func:`k_core` (``CORE_K``, ``PEEL_ROUNDS``) —
     the same peel rounds unrolled
     as chained MATERIALIZED CTEs (each round's edge relation is
@@ -554,7 +553,7 @@ WITH canon AS MATERIALIZED (
   WHERE id_a IS NOT NULL AND id_b IS NOT NULL AND id_a <> id_b
 ), e0 AS MATERIALIZED (SELECT * FROM canon),
 {chain}
-SELECT id AS {id_out}, CAST(count(*) AS BIGINT) AS degree FROM (
+SELECT id AS doc_id, CAST(count(*) AS BIGINT) AS degree FROM (
   SELECT __a AS id FROM e{PEEL_ROUNDS}
   UNION ALL SELECT __b AS id FROM e{PEEL_ROUNDS}
 ) GROUP BY id ORDER BY id

@@ -99,22 +99,21 @@ def interpolate_join(queries: DataFrame, series: DataFrame) -> DataFrame:
     )
 
 
-def interpolate_join_sql(
-    queries_sql: str,
-    series_sql: str,
-    query_cols: str = "q.*",
-) -> str:
-    """DuckDB twin of :func:`interpolate_join` (clamping):
-    backward + forward native ASOF joins feeding the SAME lerp expression (``epoch_us`` integers, identical operation
-    order) as :func:`interpolate_join`.  ``query_cols`` defaults to
-    ``q.*`` — the Spark twin returns exactly the query columns, and a
-    bare ``*`` would leak all three relations' duplicate ts/key
-    columns into the shape.  The deduped series is a CTE so the twin
-    aggregates it once, not once per ASOF side (DuckDB accepts WITH
-    inside a derived table, so panels can still wrap this SQL)."""
+def interpolate_join_sql() -> str:
+    """DuckDB twin of :func:`interpolate_join` (clamping) over the
+    ``events`` clicks (queries) and purchases (series): backward +
+    forward native ASOF joins feeding the SAME lerp expression
+    (``epoch_us`` integers, identical operation order) as
+    :func:`interpolate_join`.  It selects exactly the query columns
+    — the Spark twin returns those, and a bare ``*`` would leak all
+    three relations' duplicate ts/key columns into the shape.  The
+    deduped series is a CTE so the twin aggregates it once, not once
+    per ASOF side (DuckDB accepts WITH inside a derived table, so
+    panels can still wrap this SQL)."""
     dedup = (
-        f"SELECT user_id, ts, max(CAST(value AS DOUBLE)) AS __v "
-        f"FROM ({series_sql}) GROUP BY user_id, ts"
+        "SELECT user_id, ts, max(CAST(value AS DOUBLE)) AS __v "
+        "FROM (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') "
+        "GROUP BY user_id, ts"
     )
     lerp = (
         "p.__v + (n.__v - p.__v) * (epoch_us(q.ts) - epoch_us(p.ts))"
@@ -122,7 +121,7 @@ def interpolate_join_sql(
     )
     return (
         f"WITH __dedup AS ({dedup}) "
-        f"SELECT {query_cols}, round(CASE "
+        "SELECT q.event_id, q.user_id, q.ts, round(CASE "
         # explicit NULL-ts guard: DuckDB's native ASOF sorts a NULL
         # query ts past the series and hands it the extremum point, so
         # a single-point series would "clamp" a NULL timestamp — the
@@ -134,7 +133,7 @@ def interpolate_join_sql(
         "WHEN p.ts IS NOT NULL THEN p.__v "
         "WHEN n.ts IS NOT NULL THEN n.__v "
         "END, 6) + 0 AS interp_value "
-        f"FROM ({queries_sql}) q "
+        "FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') q "
         f"ASOF LEFT JOIN __dedup p "
         f"  ON q.user_id = p.user_id AND q.ts >= p.ts "
         f"ASOF LEFT JOIN __dedup n "

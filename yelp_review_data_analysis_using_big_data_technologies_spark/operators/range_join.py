@@ -25,18 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import cols_list
 
 
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str | list[str] | None = None,
-) -> DataFrame:
+def interval_overlap_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """INTERVAL × INTERVAL overlap join (the sibling of
     :func:`range_join`'s point-in-interval): every (left, right) pair
     whose half-open spans ``[l_start, l_end)`` / ``[r_start, r_end)``
-    intersect, key-scoped by ``by``, with ``overlap_seconds`` attached.
+    intersect, key-scoped by ``user_id``, with ``overlap_seconds``
+    attached.
 
     Same bucketization trick — both sides explode into the one-hour
     time buckets they cover and the join runs as a hash join on
@@ -54,7 +50,7 @@ def interval_overlap_join(
     anything containing its point — filtered explicitly).  Overlap
     length is computed on exact ``unix_micros`` integers and divided
     once, so both engines agree to the 6-dp contract."""
-    by_cols = cols_list(by)
+    by_cols = ["user_id"]
     clash = (set(left.columns) & set(right.columns)) - set(by_cols)
     if clash:
         raise ValueError(
@@ -111,18 +107,12 @@ def interval_overlap_join(
     )
 
 
-def range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    start: str = "start",
-    end: str = "end",
-    by: str | list[str] | None = None,
-    bucket_seconds: int = 3600,
-) -> DataFrame:
+def range_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Inner join of each ``points`` row to every ``intervals`` row
-    whose ``[start, end]`` contains its ``ts`` (closed on both ends),
-    optionally key-scoped by ``by``."""
-    by_cols = cols_list(by)
+    of the same ``user_id`` whose ``[win_start, win_end]`` contains
+    its ``ts`` (closed on both ends), over 30-minute buckets."""
+    by_cols = ["user_id"]
+    start, end = "win_start", "win_end"
     clash = (set(points.columns) & set(intervals.columns)) - set(by_cols)
     if clash:
         raise ValueError(
@@ -130,7 +120,7 @@ def range_join(
         )
 
     def _bucket(c):
-        return (F.unix_timestamp(F.col(c)) / bucket_seconds).cast("long")
+        return (F.unix_timestamp(F.col(c)) / 1800).cast("long")
 
     p = points.withColumn("__b", _bucket("ts"))
     i = intervals.withColumn(

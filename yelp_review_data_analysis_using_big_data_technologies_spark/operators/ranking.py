@@ -34,20 +34,16 @@ distributed.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def distributed_rank(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-) -> DataFrame:
-    """Attach ``rnk``, ``dense_rnk``, ``pct_rank`` for ``order_col``
-    (descending, NULLs last) within each key — equal to the SQL window
-    functions, computed without sorting the full data per key."""
+def distributed_rank(df: DataFrame) -> DataFrame:
+    """Attach ``rnk``, ``dense_rnk``, ``pct_rank`` for ``value``
+    (descending, NULLs last) within each ``event_type`` — equal to the
+    SQL window functions, computed without sorting the full data per
+    key."""
+    keys, order_col = ["event_type"], "value"
     direction = F.col(order_col).desc_nulls_last()
     counts = df.groupBy(*keys, order_col).agg(F.count("*").alias("__c"))
     w = Window.partitionBy(*keys).orderBy(direction)
@@ -86,22 +82,16 @@ def distributed_rank(
     )
 
 
-def distributed_rank_sql(
-    keys: Sequence[str],
-    order_col: str,
-    select_cols: Sequence[str],
-    table: str,
-) -> str:
-    """DuckDB twin — the NAIVE window formulation the decomposition
-    must equal (rank/dense_rank/percent_rank, descending, NULLs last)."""
-    ks = ", ".join(keys)
-    cols = ", ".join(select_cols)
-    over = f"(PARTITION BY {ks} ORDER BY {order_col} DESC NULLS LAST)"
+def distributed_rank_sql(table: str) -> str:
+    """DuckDB twin over ``table``'s ``(event_id, event_type, value)`` —
+    the NAIVE window formulation the decomposition must equal
+    (rank/dense_rank/percent_rank, descending, NULLs last)."""
+    over = "(PARTITION BY event_type ORDER BY value DESC NULLS LAST)"
     return f"""
-SELECT {cols},
+SELECT event_id, event_type, value,
        rank() OVER {over} AS rnk,
        dense_rank() OVER {over} AS dense_rnk,
-       round(CASE WHEN count(*) OVER (PARTITION BY {ks}) > 1
+       round(CASE WHEN count(*) OVER (PARTITION BY event_type) > 1
              THEN percent_rank() OVER {over} ELSE 0.0 END, 6) + 0
          AS pct_rank
 FROM {table}

@@ -49,23 +49,17 @@ def _keyed_hash(
     return df.select(*key_cols, F.xxhash64(*hashed).alias("__h"))
 
 
-def table_diff(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: Sequence[str],
-) -> DataFrame:
-    """Keyed diff → ``(*key_cols, status)`` with status one of
-    ``added | removed | changed | unchanged | duplicate_key |
-    null_key``.
+def table_diff(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Diff keyed on ``o_orderkey`` → ``(o_orderkey, status)`` with
+    status one of ``added | removed | changed | unchanged |
+    duplicate_key | null_key``.
 
     Every non-key column is compared (in LEFT's column order, the
     fixed hash order).  Key sets must exist on both sides; a
     side-specific payload column would silently escape comparison, so
     the diff raises if the two sides' non-key columns differ.
     """
-    key_cols = list(key_cols)
-    if not key_cols:
-        raise ValueError("key_cols must name at least one column")
+    key_cols = ["o_orderkey"]
     compare_cols = [c for c in left.columns if c not in key_cols]
     rc = [c for c in right.columns if c not in key_cols]
     if set(compare_cols) != set(rc):
@@ -115,15 +109,11 @@ def table_diff(
     return joined.select(*key_cols, status.alias("status"))
 
 
-def diff_summary(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: Sequence[str],
-) -> DataFrame:
-    """One row per status with its key count — the assertion surface
+def diff_summary(left: DataFrame, right: DataFrame) -> DataFrame:
+    """One row per status with its ``o_orderkey`` count — the assertion surface
     (``added = expected_inserts AND changed = expected_updates AND
     removed = 0`` is the promotion gate a backfill job runs)."""
-    diff = table_diff(left, right, key_cols)
+    diff = table_diff(left, right)
     return (
         diff.groupBy("status")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -40,17 +40,6 @@ def equi_join(
     return left.join(r, on=list(on) if not isinstance(on, str) else on, how=how)
 
 
-def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """EXISTS — rows of ``left`` with a match; never duplicates left rows."""
-    return equi_join(left, right, on, how="left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
-    """NOT EXISTS — the referential-integrity audit the reference lacks
-    (its inner joins silently drop orphans, scripts/etl.py:46-48)."""
-    return equi_join(left, right, on, how="left_anti")
-
-
 def stack_legs(legs: Mapping[str, DataFrame], columns: Sequence[str]) -> DataFrame:
     """§2.11 panel stacking — tag each leg with its ``op`` key and
     union them by name into ``(op, *columns)``.  A leg without one of
@@ -108,21 +97,18 @@ def dedup_keyed_deterministic(
     return unpacked.select(*df.columns)
 
 
-def latest_by(
-    df: DataFrame, keys: Sequence[str], order_cols: Sequence[str]
-) -> DataFrame:
+def latest_by(df: DataFrame) -> DataFrame:
     """CDC latest-state compaction: keep the row with the GREATEST
-    ``order_cols`` per key — the latest-wins twin of
+    ``(ts, event_id)`` per ``user_id`` — the latest-wins twin of
     :func:`dedup_keyed_deterministic` (same single partial-aggregated
     ``max(struct(...))`` pass, no window sort), used to collapse a
     change stream into current state.  Remaining columns join the
-    comparison struct after ``order_cols`` so ties resolve
+    comparison struct after ``(ts, event_id)`` so ties resolve
     deterministically; oracle twin: ``row_number() OVER (PARTITION BY
-    keys ORDER BY order_cols DESC NULLS LAST, rest DESC NULLS LAST)
-    = 1`` (struct max puts NULL smallest, so DESC must sort nulls
-    last)."""
-    keys = list(keys)
-    order_cols = list(order_cols)
+    user_id ORDER BY ts DESC NULLS LAST, event_id DESC NULLS LAST,
+    rest DESC NULLS LAST) = 1`` (struct max puts NULL smallest, so
+    DESC must sort nulls last)."""
+    keys, order_cols = ["user_id"], ["ts", "event_id"]
     rest = [c for c in df.columns if c not in keys and c not in order_cols]
     packed = df.groupBy(*keys).agg(
         F.max(F.struct(*(order_cols + rest))).alias("__survivor")
@@ -133,29 +119,17 @@ def latest_by(
     return unpacked.select(*df.columns)
 
 
-def duplicate_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
+def duplicate_rows(df: DataFrame) -> DataFrame:
     """F1/A1 — the reference's duplicate-detection diagnostic
-    (scripts/etl.py:54): group by all (or ``subset``) columns and keep
-    groups with count > 1."""
-    cols = list(subset) if subset else df.columns
-    return df.groupBy(*cols).count().filter(F.col("count") > 1)
+    (scripts/etl.py:54): group by the lineitem key ``(l_orderkey,
+    l_linenumber)`` and keep groups with count > 1."""
+    return df.groupBy("l_orderkey", "l_linenumber").count().filter(F.col("count") > 1)
 
 
 def drop_nulls(df: DataFrame) -> DataFrame:
     """F2 — ``na.drop``: rows with a NULL in any column go (reference
     scripts/etl.py:58)."""
     return df.na.drop()
-
-
-def top_k(
-    df: DataFrame,
-    order_by: Sequence[Column | str],
-    k: int,
-) -> DataFrame:
-    """O1/O2 — global top-k.  ``orderBy(...).limit(k)`` compiles to
-    TakeOrderedAndProject: each partition keeps a k-heap, only k rows
-    per partition reach the driver-side merge — no total sort."""
-    return df.orderBy(*order_by).limit(k)
 
 
 def grouped_top_k(
@@ -184,15 +158,10 @@ def grouped_top_k(
     )
 
 
-def scd2_intervals(
-    df: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    tiebreak: Sequence[str] = (),
-) -> DataFrame:
+def scd2_intervals(df: DataFrame) -> DataFrame:
     """Slowly-changing-dimension type-2 history: every change row
     becomes a VERSION with a validity interval — ``valid_from`` is the
-    row's own ``ts_col``, ``valid_to`` the NEXT change's (half-open
+    row's own ``ts``, ``valid_to`` the NEXT change's (half-open
     ``[from, to)``), and the latest version per key carries NULL
     ``valid_to`` + ``is_current = true``.  The historical complement
     of :func:`latest_by`: that collapses a change stream to current
@@ -200,17 +169,20 @@ def scd2_intervals(
     as-of queries become a plain range predicate
     (``valid_from <= t AND (valid_to > t OR valid_to IS NULL)``).
 
-    One ``lead()`` window per key — a single shuffle on the key, the
-    same partitioning any downstream per-key query wants.  ``tiebreak``
-    orders simultaneous changes deterministically (and must match the
-    oracle's ORDER BY).
+    One ``lead()`` window per ``user_id`` — a single shuffle on the
+    key, the same partitioning any downstream per-key query wants.
+    The full-row tiebreak ``(event_id, event_type, value)`` orders
+    simultaneous changes deterministically (and must match the
+    oracle's ORDER BY): duplicate event_ids (replayed CDC loads)
+    otherwise leave a real window tie and the engines pair values
+    with validity intervals differently.
     """
     from pyspark.sql import Window
 
-    order = [F.asc(ts_col)] + [F.asc(c) for c in tiebreak]
-    w = Window.partitionBy(*keys).orderBy(*order)
+    order = [F.asc(c) for c in ("ts", "event_id", "event_type", "value")]
+    w = Window.partitionBy("user_id").orderBy(*order)
     return (
-        df.withColumn("valid_from", F.col(ts_col))
-        .withColumn("valid_to", F.lead(ts_col).over(w))
+        df.withColumn("valid_from", F.col("ts"))
+        .withColumn("valid_to", F.lead("ts").over(w))
         .withColumn("is_current", F.col("valid_to").isNull())
     )

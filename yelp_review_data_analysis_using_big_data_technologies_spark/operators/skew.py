@@ -19,18 +19,20 @@ driver checks the salted join against a plain-SQL oracle).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import cols_list
 
 SALT_COL = "__salt"
 
+#: Salt values of :func:`salted_join`: a hot key's rows spread over
+#: this many shuffle partitions.
+BUCKETS = 8
 
-def with_salt(df: DataFrame, buckets: int) -> DataFrame:
-    """Attach a salt in ``[0, buckets)``: a hash of the full row plus a
+
+def with_salt(df: DataFrame) -> DataFrame:
+    """Attach a salt in ``[0, BUCKETS)``: a hash of the full row plus a
     per-row sequence component.  The row hash alone would map
     EXACT-DUPLICATE rows of a hot key (a common skew shape — repeated
     events) onto one salt value, defeating the spread; feeding
@@ -54,35 +56,31 @@ def with_salt(df: DataFrame, buckets: int) -> DataFrame:
         SALT_COL,
         F.pmod(
             F.xxhash64(*df.columns, F.monotonically_increasing_id()),
-            F.lit(buckets),
+            F.lit(BUCKETS),
         ).cast("int"),
     ).localCheckpoint(eager=True)
 
 
-def replicate_for_salt(df: DataFrame, buckets: int) -> DataFrame:
-    """Cross the (small) side with every salt value — ``buckets×``
+def replicate_for_salt(df: DataFrame) -> DataFrame:
+    """Cross the (small) side with every salt value — ``BUCKETS×``
     blow-up, acceptable only for dimension-sized inputs."""
     return df.withColumn(
-        SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
+        SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(BUCKETS)]))
     )
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-) -> DataFrame:
-    """Inner equi-join where ``left`` is large with skewed ``on`` keys
-    and ``right`` is small but above the broadcast threshold.  Joins
-    on ``(on..., salt)`` so the hot key's rows land in 8 different
-    shuffle partitions instead of one straggler task.
+def salted_join(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Inner equi-join on ``c_custkey`` where ``left`` is large with
+    skewed keys and ``right`` is small but above the broadcast
+    threshold.  Joins on ``(c_custkey, salt)`` so the hot key's rows
+    land in ``BUCKETS`` different shuffle partitions instead of one
+    straggler task.
 
     The salting is transparent for an inner join (every left row
     carries exactly one salt; the replicated right side only ever
     matches or vanishes).  A right/full join would surface the 8×
     replicated right rows as spurious null-left output, so none is
     offered."""
-    keys = cols_list(on)
-    salted_left = with_salt(left, 8)
-    salted_right = replicate_for_salt(right, 8)
-    return salted_left.join(salted_right, on=keys + [SALT_COL]).drop(SALT_COL)
+    salted_left = with_salt(left)
+    salted_right = replicate_for_salt(right)
+    return salted_left.join(salted_right, on=["c_custkey", SALT_COL]).drop(SALT_COL)

@@ -86,7 +86,7 @@ def day_of_week_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(
-            day_name("o_orderdate").alias("dayname"),
+            day_name().alias("dayname"),
             F.col("o_orderpriority").alias("priority"),
         )
         .agg(F.count(F.lit(1)).alias("n_orders"))
@@ -103,7 +103,7 @@ def most_active_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass."""
     orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.groupBy(day_name("o_orderdate").alias("dayname"))
+        orders.groupBy(day_name().alias("dayname"))
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc_nulls_last("dayname"))
         .limit(1)

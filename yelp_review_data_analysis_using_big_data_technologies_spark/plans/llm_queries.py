@@ -113,7 +113,7 @@ def doc_unicode_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.normalize import normalize_text
 
     docs = load_table(spark, sf_dir, "documents")
-    normed = normalize_text(docs, flag_col="changed")
+    normed = normalize_text(docs)
     return normed.select(
         "doc_id", F.sha2(F.col("text"), 256).alias("nfc_hash"), "changed"
     )
@@ -225,7 +225,7 @@ def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard pairs via inverted shingle index (df-capped
     posting lists; no all-pairs join)."""
     docs = load_table(spark, sf_dir, "documents")
-    return ldd.ngram_jaccard_pairs(docs, threshold=0.3)
+    return ldd.ngram_jaccard_pairs(docs)
 
 
 def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,7 +257,7 @@ def pipeline_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = split_assign(docs)
     train = assigned.where(F.col("split") == "train")
     ev = assigned.where(F.col("split").isin("val", "test"))
-    pairs = ldd.ngram_jaccard_join(train, ev, threshold=0.3)
+    pairs = ldd.ngram_jaccard_join(train, ev)
     tag = ev.select(F.col("doc_id").alias("id_r"), "split")
     leaks = (
         pairs.join(tag, on="id_r")
@@ -297,7 +297,7 @@ def doc_cross_corpus_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     left = docs.where(F.col("doc_id") % 2 == 0)
     right = docs.where(F.col("doc_id") % 2 == 1)
-    return ldd.ngram_jaccard_join(left, right, threshold=0.3).orderBy(
+    return ldd.ngram_jaccard_join(left, right).orderBy(
         "id_l", "id_r"
     )
 
@@ -373,7 +373,7 @@ def corpus_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.join(labels, on="doc_id", how="left").select(
         "doc_id",
         F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-        ltx.quality_score("text").alias("__q"),
+        ltx.quality_score().alias("__q"),
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("__q"), F.asc("doc_id")
@@ -438,29 +438,16 @@ def doc_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     every run/engine (salted-md5 uniform draw, correctly-rounded
     arithmetic only; see :func:`llm.sampling.weighted_priority`)."""
     docs = load_table(spark, sf_dir, "documents")
-    out = lsmp.weighted_take(
-        docs.select("doc_id", "n_chars"), k=100, weight_col="n_chars"
-    )
+    out = lsmp.weighted_take(docs.select("doc_id", "n_chars"))
     return out.withColumn("priority", F.round("priority", 6)).orderBy(
         "doc_id"
     )
 
 
-#: Target language mixture for :func:`corpus_mixture_sample` — boost
-#: English, rebalance the rest to equal shares (the corpus is ~44% en).
-_MIXTURE_WEIGHTS = {
-    "de": 0.15,
-    "en": 0.4,
-    "es": 0.15,
-    "fr": 0.15,
-    "zh": 0.15,
-}
-
-
 def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-mixture rebalancing (round 5): derive per-language keep
     rates IN-ENGINE from the corpus's token totals so the sampled
-    corpus's token shares hit ``_MIXTURE_WEIGHTS`` (no upsampling —
+    corpus's token shares hit ``llm.sampling.MIXTURE_WEIGHTS`` (no upsampling —
     the binding domain keeps everything, the rest downsample
     deterministically via the salted-md5 draw).  Output is the
     accounting panel: totals, rate, kept docs/tokens, achieved share.
@@ -470,12 +457,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership → achieved mixture.  See
     :func:`llm.sampling.mixture_report`."""
     docs = load_table(spark, sf_dir, "documents")
-    return lsmp.mixture_report(
-        docs,
-        _MIXTURE_WEIGHTS,
-        domain_col="lang",
-        tokens=ltx.token_count("text"),
-    )
+    return lsmp.mixture_report(docs, ltx.token_count())
 
 
 # --------------------------------------------------------------------------
@@ -490,10 +472,10 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
-        ltx.token_count("text").alias("__tok"),
+        ltx.token_count().alias("__tok"),
         F.length("text").alias("__chars"),
-        ltx.punct_ratio("text").alias("__punct"),
-        ltx.stopword_ratio("text").alias("__stop"),
+        ltx.punct_ratio().alias("__punct"),
+        ltx.stopword_ratio().alias("__stop"),
     )
     return (
         per_doc.groupBy("lang")
@@ -514,8 +496,8 @@ def doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        ltx.token_count("text").alias("ws_tokens"),
-        ltx.bpe_token_count("text").alias("bpe_tokens"),
+        ltx.token_count().alias("ws_tokens"),
+        ltx.bpe_token_count().alias("bpe_tokens"),
         F.length("text").alias("n_chars_live"),
     )
 
@@ -524,7 +506,7 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language-ID confusion table: labeled lang × predicted."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select("lang", ltx.lang_id("text").alias("lang_pred"))
+        docs.select("lang", ltx.lang_id().alias("lang_pred"))
         .groupBy("lang", "lang_pred")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("lang", "lang_pred")
@@ -546,7 +528,7 @@ def doc_quality_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     scored = docs.select(
         bucketize(
-            ltx.quality_score("text"), [(0.5, "low"), (0.75, "mid")], "high"
+            ltx.quality_score(), [(0.5, "low"), (0.75, "mid")]
         ).alias("band")
     )
     return scored.groupBy("band").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -566,8 +548,8 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.select(
         "doc_id",
         ltx.tokens("text").alias("__tk"),
-        ltx.bpe_token_count("text").alias("bpe_tokens"),
-        ltx.punct_ratio("text").alias("__punct"),
+        ltx.bpe_token_count().alias("bpe_tokens"),
+        ltx.punct_ratio().alias("__punct"),
     )
     ntok = F.size("__tk").cast("double")
     atl = F.aggregate(
@@ -587,7 +569,7 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_min(
             F.transform(ltx.shingles_from_tokens("__tk"), F.md5)
         ).alias("fp"),
-        bucketize(quality, [(0.5, "low"), (0.75, "mid")], "high").alias("band"),
+        bucketize(quality, [(0.5, "low"), (0.75, "mid")]).alias("band"),
     )
 
 
@@ -603,14 +585,24 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unstaged, the min(struct) dedup aggregate executes twice.
     stage1 = lstg.stage(ldd.exact_dedup(docs).drop("content_hash"))
     stage2 = ldd.near_dup_removal(stage1)
-    stage3 = stage2.filter(ltx.quality_score("text") > 0.5)
+    stage3 = stage2.filter(ltx.quality_score() > 0.5)
     return (
         stage3.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(ltx.token_count("text")).alias("total_tokens"),
+            F.sum(ltx.token_count()).alias("total_tokens"),
         )
         .orderBy("lang")
+    )
+
+
+def _quality_gated(df: DataFrame) -> DataFrame:
+    """The corpus quality gate: rows of ``df`` scoring above 0.5, as
+    ``(doc_id, lang, n_tokens)`` with whitespace-token counts."""
+    return df.filter(ltx.quality_score() > 0.5).select(
+        "doc_id",
+        "lang",
+        ltx.token_count().cast("bigint").alias("n_tokens"),
     )
 
 
@@ -629,7 +621,7 @@ def _freeze_manifest(
          (``doc_id % 20 = 0`` plays the eval suite; its docs also
          leave the corpus — eval text must never be trained on)
       4. quality filter (``quality_score > 0.5``)
-      5. token-mixture rebalancing to ``_MIXTURE_WEIGHTS`` over lang
+      5. token-mixture rebalancing to ``MIXTURE_WEIGHTS`` over lang
       6. deterministic shuffle → global training ``position`` +
          round-robin ``shard``
       7. greedy token-budget packing IN TRAINING ORDER (the prefix
@@ -681,15 +673,7 @@ def _freeze_manifest(
     # sub-second once materialized; the full entry dropped 31→6 s cold
     # / 10→5 s warm with the three narrow stages checkpointed).  Rows
     # are identical — only when they materialize changes.
-    good = (
-        decont.filter(ltx.quality_score("text") > 0.5)
-        .select(
-            "doc_id",
-            "lang",
-            ltx.token_count("text").cast("bigint").alias("n_tokens"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    good = _quality_gated(decont).localCheckpoint(eager=True)
     # 5: mixture membership (rates derived in-engine from good's own
     # token totals; |domains|-row broadcast, no corpus shuffle).
     # balance="cluster" (r15, optional stage) swaps the declared-lang
@@ -704,9 +688,7 @@ def _freeze_manifest(
         )
     else:
         sampled = (
-            lsmp.mixture_sample(
-                good, _MIXTURE_WEIGHTS, domain_col="lang", tokens="n_tokens"
-            )
+            lsmp.mixture_sample(good, lsmp.MIXTURE_WEIGHTS, domain_col="lang")
             .localCheckpoint(eager=True)
         )
     # 6: deterministic training order + shard; manifest STAGED — it
@@ -891,15 +873,7 @@ def corpus_freeze_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bench = docs.filter(F.expr(_BENCH_PRED))
     decont = ldec.decontaminate(admitted, bench)
-    return (
-        decont.filter(ltx.quality_score("text") > 0.5)
-        .select(
-            "doc_id",
-            "lang",
-            ltx.token_count("text").cast("bigint").alias("n_tokens"),
-        )
-        .orderBy("doc_id")
-    )
+    return _quality_gated(decont).orderBy("doc_id")
 
 
 def corpus_freeze_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -938,17 +912,9 @@ def corpus_freeze_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r15 opt, the _freeze_manifest finding): each frame feeds 2-3
     # consumers inside ONE query, and an unfilled lazy cache lets
     # those references re-run the whole upstream dedup chain
-    good = (
-        decont.filter(ltx.quality_score("text") > 0.5)
-        .select(
-            "doc_id",
-            "lang",
-            ltx.token_count("text").cast("bigint").alias("n_tokens"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    good = _quality_gated(decont).localCheckpoint(eager=True)
     kept = lsmp.mixture_sample(
-        good, _MIXTURE_WEIGHTS, domain_col="lang", tokens="n_tokens"
+        good, lsmp.MIXTURE_WEIGHTS, domain_col="lang"
     ).localCheckpoint(eager=True)
 
     def _tag(df: DataFrame, stage: str) -> DataFrame:
@@ -986,7 +952,7 @@ def corpus_freeze_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    ntok = ltx.token_count("text").cast("bigint")
+    ntok = ltx.token_count().cast("bigint")
 
     def _panel(df: DataFrame, grp: str, key) -> DataFrame:
         return df.groupBy(key.alias("key")).agg(
@@ -1022,7 +988,7 @@ def corpus_freeze_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overlap: would a later per-doc criterion have dropped it anyway
     lowq_rows = _panel(
         drops.filter(F.col("stage") != "low_quality").filter(
-            ~(ltx.quality_score("text") > 0.5)
+            ~(ltx.quality_score() > 0.5)
         ),
         "also",
         F.concat(F.col("stage"), F.lit("&low_quality")),
@@ -1074,11 +1040,7 @@ def corpus_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_cluster_balance.py).  Output: kept rows with their
     cluster id."""
     docs = load_table(spark, sf_dir, "documents")
-    good = docs.filter(ltx.quality_score("text") > 0.5).select(
-        "doc_id",
-        "lang",
-        ltx.token_count("text").cast("bigint").alias("n_tokens"),
-    )
+    good = _quality_gated(docs)
     return (
         lsmp.cluster_balance_sample(good, _load_embeddings(spark, sf_dir))
         .select("doc_id", "lang", "n_tokens", "cluster_id")
@@ -1143,20 +1105,6 @@ def corpus_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # documents: dataset splitting / sampling / term stats / chunking
 # --------------------------------------------------------------------------
 
-#: Deterministic per-language sampling fractions for the stratified
-#: sample (downsample dominant en, keep mid langs, thin the tail).
-STRAT_FRACTIONS: dict[str, float] = {
-    "en": 0.5,
-    "de": 0.8,
-    "fr": 0.8,
-    "es": 0.8,
-    "zh": 0.25,
-}
-
-#: Exact per-language row cap for the take-per-stratum panel branch.
-_TAKE_K = 20
-
-
 #: Metadata-sanity ceiling for per-doc character counts (r8 extreme-
 #: magnitude probe): a single document cannot exceed ~4 TB of text, so
 #: anything above is corrupt METADATA, not a big doc.  Out-of-bounds
@@ -1199,9 +1147,9 @@ def pipeline_split_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         {
             "split": per_group(lsmp.split_assign(docs), "split"),
             "stratified": per_group(
-                lsmp.stratified_sample(docs, "lang", STRAT_FRACTIONS), "lang"
+                lsmp.stratified_sample(docs), "lang"
             ),
-            "take": per_group(lsmp.take_per_stratum(docs, "lang", k=_TAKE_K), "lang"),
+            "take": per_group(lsmp.take_per_stratum(docs), "lang"),
         },
         ["grp", "n_docs", "sum_chars"],
     ).orderBy("op", "grp")
@@ -1294,14 +1242,8 @@ def doc_c4_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # embeddings: similarity search
 # --------------------------------------------------------------------------
 
-_N_QUERIES = 5
-_TOP_K = 5
-_IVF_CELLS = 8
-_IVF_PROBE = 2
-
-
 def _query_set(embeddings: DataFrame) -> DataFrame:
-    return embeddings.filter(F.col("vec_id") < _N_QUERIES).select(
+    return embeddings.filter(F.col("vec_id") < lvec.N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
 
@@ -1309,15 +1251,12 @@ def _query_set(embeddings: DataFrame) -> DataFrame:
 def vec_top_k_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k for a broadcast query set."""
     emb = _load_embeddings(spark, sf_dir)
-    return lvec.top_k_bruteforce(emb, _query_set(emb), k=_TOP_K)
+    return lvec.top_k_bruteforce(emb, _query_set(emb), k=lvec.TOP_K)
 
 
-#: fixed lexical query over the synthetic vocabulary (df-diverse) and
 #: the fixed query vector id for the hybrid entry
-_BM25_QUERY = ("spark", "vector", "merge")
 _HYBRID_QVEC_ID = 7
 _HYBRID_LIST_K = 20
-_RRF_K = 60
 
 
 def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1326,7 +1265,7 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses the token explode before any aggregate; df and corpus
     stats ride tiny broadcasts."""
     docs = load_table(spark, sf_dir, "documents")
-    return ltm.bm25_topk(docs, _BM25_QUERY)
+    return ltm.bm25_topk(docs, ltm.BM25_QUERY)
 
 
 def doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,10 +1278,6 @@ def doc_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ltm.vocab_coverage(docs)
 
 
-_PRF_FEEDBACK_K = 5
-_PRF_EXPAND_M = 3
-
-
 def doc_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance-feedback expansion audit
     (llm/terms.py::prf_expansion_terms): which terms the BM25 top-5
@@ -1350,9 +1285,7 @@ def doc_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposed as its own entry so the expansion step the PRF search
     consumes is independently hash-verified."""
     docs = load_table(spark, sf_dir, "documents")
-    return ltm.prf_expansion_terms(
-        docs, _BM25_QUERY, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M
-    )
+    return ltm.prf_expansion_terms(docs)
 
 
 def doc_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1363,17 +1296,7 @@ def doc_bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only driver-side state (≤ 3 strings); the twin derives the
     SAME expanded set in-SQL."""
     docs = load_table(spark, sf_dir, "documents")
-    return ltm.bm25_prf_topk(
-        docs,
-        _BM25_QUERY,
-        feedback_k=_PRF_FEEDBACK_K,
-        expand_m=_PRF_EXPAND_M,
-    )
-
-
-_MMR_K = 8
-_MMR_POOL = 20
-_MMR_LAMBDA = 0.7
+    return ltm.bm25_prf_topk(docs)
 
 
 def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1383,9 +1306,7 @@ def vec_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     that keeps the final list from being near-duplicates of the best
     hit."""
     emb = _load_embeddings(spark, sf_dir)
-    return lvec.mmr_rerank(
-        emb, _query_set(emb), k=_MMR_K, pool=_MMR_POOL, lam=_MMR_LAMBDA
-    )
+    return lvec.mmr_rerank(emb, _query_set(emb))
 
 
 #: Delta split for the incremental embedding dedup (the doc-side
@@ -1404,17 +1325,15 @@ def vec_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape that holds when the accumulated corpus is 100 TB and the
     delta is a day's ingest.
 
-    ``n_planes`` is PINNED to 4 (the ``vec_cosine_near_dup_pinned``
-    precedent): the default derives planes from the corpus+delta
-    count at runtime, so past ``target_bucket_size`` rows the engine
-    would silently widen its band keys while the DuckDB twin stays at
-    ``_band_planes(4)`` and the hash would diverge with scale
-    factor."""
+    The operator's bands are 4 planes wide, the width the DuckDB twin
+    pins (``_band_planes(4)``): a width derived from the row count
+    would widen the engine's band keys past ~16k rows while the twin
+    stayed at 4, and the hash would diverge with scale factor."""
     emb = _load_embeddings(spark, sf_dir)
     corpus = emb.where(F.col("vec_id") < _VEC_DELTA_SPLIT)
     delta = emb.where(F.col("vec_id") >= _VEC_DELTA_SPLIT)
     return (
-        lvec.cosine_dedup_delta(corpus, delta, n_planes=4)
+        lvec.cosine_dedup_delta(corpus, delta)
         .select("vec_id", "label")
         .orderBy("vec_id")
     )
@@ -1428,7 +1347,7 @@ def doc_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (score DESC, id) ranking."""
     docs = load_table(spark, sf_dir, "documents")
     emb = _load_embeddings(spark, sf_dir)
-    lex = ltm.bm25_topk(docs, _BM25_QUERY, k=_HYBRID_LIST_K).select(
+    lex = ltm.bm25_topk(docs, ltm.BM25_QUERY, k=_HYBRID_LIST_K).select(
         "doc_id", "rk"
     )
     q = emb.filter(F.col("vec_id") == _HYBRID_QVEC_ID).select(
@@ -1438,7 +1357,7 @@ def doc_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec = lvec.top_k_bruteforce(emb, q, k=_HYBRID_LIST_K).select(
         F.col("vec_id").alias("doc_id"), "rk"
     )
-    fused = ltm.rrf_fuse([lex, vec], rrf_k=_RRF_K)
+    fused = ltm.rrf_fuse([lex, vec])
     from pyspark.sql import Window
 
     # fused is bounded by the two input lists (≤ 2·_HYBRID_LIST_K
@@ -1482,29 +1401,22 @@ def retrieval_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivf_serve", sf_dir)
-    params = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
+    params = lvec.build_ivf_index(emb, path, n_cells=lvec.IVF_CELLS)
     q = emb.filter(F.col("vec_id") == _HYBRID_QVEC_ID).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
     vec = lvec.search_ivf_index(
-        spark, path, q, k=_HYBRID_LIST_K, n_probe=_IVF_PROBE, params=params
+        spark, path, q, k=_HYBRID_LIST_K, n_probe=lvec.IVF_PROBE, params=params
     ).select(F.col("vec_id").alias("doc_id"), "rk")
     # one shared tokenize pass across the lexical leg and the whole
     # PRF round (r15 opt — previously 4 independent corpus tokenizes)
     tk = ltm.tokenized_corpus(docs)
     lex = ltm.bm25_topk(
-        docs, _BM25_QUERY, k=_HYBRID_LIST_K, tokenized=tk
+        docs, ltm.BM25_QUERY, k=_HYBRID_LIST_K, tokenized=tk
     ).select("doc_id", "rk")
-    lex_prf = ltm.bm25_prf_topk(
-        docs,
-        _BM25_QUERY,
-        k=_HYBRID_LIST_K,
-        feedback_k=_PRF_FEEDBACK_K,
-        expand_m=_PRF_EXPAND_M,
-        tokenized=tk,
-    ).select("doc_id", "rk")
-    fused = ltm.rrf_fuse([lex, lex_prf, vec], rrf_k=_RRF_K)
+    lex_prf = ltm.bm25_prf_topk(docs, k=_HYBRID_LIST_K, tokenized=tk).select("doc_id", "rk")
+    fused = ltm.rrf_fuse([lex, lex_prf, vec])
     valid = emb.filter(lvec.finite_vec("embedding", lvec.EMBEDDING_DIM)).select(
         F.col("vec_id").alias("doc_id")
     )
@@ -1518,25 +1430,21 @@ def retrieval_serving_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("vec_id"),
         F.col("rrf_score").alias("rel"),
     )
-    return lvec.mmr_rerank_candidates(
-        cand, emb, k=_SERVE_K, lam=_MMR_LAMBDA
-    ).orderBy("rk")
+    return lvec.mmr_rerank_candidates(cand, emb, k=_SERVE_K).orderBy("rk")
 
 
 def vec_top_k_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucketed approximate top-k (bucket equi-join, no
     all-pairs)."""
     emb = _load_embeddings(spark, sf_dir)
-    return lvec.top_k_ann_signlsh(emb, _query_set(emb), k=_TOP_K)
+    return lvec.top_k_ann_signlsh(emb, _query_set(emb))
 
 
 def vec_top_k_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-k: deterministic seeded coarse
     quantizer, inverted-list equi-join, n_probe recall dial."""
     emb = _load_embeddings(spark, sf_dir)
-    return lvec.top_k_ann_ivf(
-        emb, _query_set(emb), k=_TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE
-    )
+    return lvec.top_k_ann_ivf(emb, _query_set(emb))
 
 
 def vec_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1550,9 +1458,9 @@ def vec_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns exactly what the in-memory operator does."""
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivf_index", sf_dir)
-    params = lvec.build_ivf_index(emb, path, n_cells=_IVF_CELLS)
+    params = lvec.build_ivf_index(emb, path, n_cells=lvec.IVF_CELLS)
     return lvec.search_ivf_index(
-        spark, path, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
+        spark, path, _query_set(emb), k=lvec.TOP_K, n_probe=lvec.IVF_PROBE,
         params=params,
     ).orderBy("query_id", "rk")
 
@@ -1575,7 +1483,7 @@ def vec_ivf_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entry is idempotent across bench repeats; its frozen params
     # thread through both merges and the search
     params = lvec.build_ivf_index(
-        emb.where(F.col("vec_id") < 100), path, n_cells=_IVF_CELLS
+        emb.where(F.col("vec_id") < 100), path, n_cells=lvec.IVF_CELLS
     )
     lvec.add_to_ivf_index(
         emb.where((F.col("vec_id") >= 100) & (F.col("vec_id") < 300)),
@@ -1585,7 +1493,7 @@ def vec_ivf_index_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     lvec.add_to_ivf_index(emb.where(F.col("vec_id") >= 300), path, params=params)
     lvec.compact_ivf_index(spark, path)
     return lvec.search_ivf_index(
-        spark, path, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
+        spark, path, _query_set(emb), k=lvec.TOP_K, n_probe=lvec.IVF_PROBE,
         params=params,
     ).orderBy("query_id", "rk")
 
@@ -1613,12 +1521,12 @@ def vec_index_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     params = lvec.build_ivf_index(
         emb.select("vec_id", "embedding").unionByName(clones),
         path,
-        n_cells=_IVF_CELLS,
+        n_cells=lvec.IVF_CELLS,
     )
     lvec.delete_from_ivf_index(clones.select("vec_id"), path)
     # erasure never touches the frozen params
     return lvec.search_ivf_index(
-        spark, path, _query_set(emb), k=_TOP_K, n_probe=_IVF_PROBE,
+        spark, path, _query_set(emb), k=lvec.TOP_K, n_probe=lvec.IVF_PROBE,
         params=params,
     ).orderBy("query_id", "rk")
 
@@ -1631,7 +1539,7 @@ _FILTER_LABELS = (1, 3, 5, 7, 9)
 #: ladder actually exercises (at sf0.01 several queries widen to the
 #: full rung).  Spelled once — the Spark scan filter and the DuckDB
 #: twin share the string verbatim.
-_FILTERED_ANN_PRED = "label = 3 AND vec_id % 7 = 0"
+
 
 
 def vec_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1651,16 +1559,10 @@ def vec_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivf_filtered", sf_dir)
     params = lvec.build_ivf_index(
-        emb, path, n_cells=_IVF_CELLS, meta_cols=["label"]
+        emb, path, n_cells=lvec.IVF_CELLS, meta_cols=["label"]
     )
     return lvec.search_ivf_index_filtered(
-        spark,
-        path,
-        _query_set(emb),
-        where=_FILTERED_ANN_PRED,
-        k=_TOP_K,
-        n_probe=_IVF_PROBE,
-        params=params,
+        spark, path, _query_set(emb), params=params
     ).orderBy("query_id", "rk")
 
 
@@ -1682,16 +1584,10 @@ def vec_filtered_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivfpq_filtered", sf_dir)
     params = lvec.build_ivfpq_index(
-        emb, path, n_cells=_IVF_CELLS, meta_cols=["label"]
+        emb, path, n_cells=lvec.IVF_CELLS, meta_cols=["label"]
     )
     return lvec.search_ivfpq_index_filtered(
-        spark,
-        path,
-        _query_set(emb),
-        where=_FILTERED_ANN_PRED,
-        k=_TOP_K,
-        n_probe=_IVF_PROBE,
-        params=params,
+        spark, path, _query_set(emb), params=params
     ).orderBy("query_id", "rk")
 
 
@@ -1705,10 +1601,9 @@ def vec_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k that can return < k rows)."""
     emb = _load_embeddings(spark, sf_dir)
     corpus = emb.where(F.col("label").isin(*_FILTER_LABELS))
-    return lvec.top_k_bruteforce(corpus, _query_set(emb), k=_TOP_K)
+    return lvec.top_k_bruteforce(corpus, _query_set(emb), k=lvec.TOP_K)
 
 
-_RECALL_PROBES = (1, 2, 4, 8)
 _RECALL_PLANES = (4, 6, 8)
 
 
@@ -1722,7 +1617,7 @@ def _recall_curve(
     after the truth set is staged and filled, so a generator defers
     the ANN construction until then."""
     bf = lstg.stage(
-        lvec.top_k_bruteforce(emb, q, k=_TOP_K).select("query_id", "vec_id")
+        lvec.top_k_bruteforce(emb, q, k=lvec.TOP_K).select("query_id", "vec_id")
     )
     # eager fill (r15 opt): bf feeds the 1-row truth broadcast AND one
     # join side of every recall leg — one reference per leg in the
@@ -1768,9 +1663,7 @@ def vec_ann_recall_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pass (lvec.top_k_ann_ivf_multidial, r15 opt — row-identical
         # to four independent top_k_ann_ivf calls; the twin is
         # unchanged)
-        for p, ann in lvec.top_k_ann_ivf_multidial(
-            emb, q, k=_TOP_K, n_cells=_IVF_CELLS, probes=_RECALL_PROBES
-        ):
+        for p, ann in lvec.top_k_ann_ivf_multidial(emb, q):
             yield "ivf_n_probe", p, ann
         # sign-LSH dial: FEWER planes = coarser buckets = more
         # candidates (an n-plane bucket refines every prefix bucket),
@@ -1778,13 +1671,10 @@ def vec_ann_recall_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         # mirror dial of n_probe, pinned in the same test
         for n in _RECALL_PLANES:
             yield "signlsh_n_planes", n, lvec.top_k_ann_signlsh(
-                emb, q, k=_TOP_K, planes=lvec.PLANE_POOL[:n]
+                emb, q, planes=lvec.PLANE_POOL[:n]
             )
 
     return _recall_curve(emb, q, legs())
-
-
-_PQ_RECALL_RERANK = (1, 2, 4)
 
 
 def vec_ann_recall_profile_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1816,29 +1706,20 @@ def vec_ann_recall_profile_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving."""
     emb = _load_embeddings(spark, sf_dir)
     q = _query_set(emb)
-    cents, books = lvec.train_ivfpq_params(emb, n_cells=_IVF_CELLS)
+    cents, books = lvec.train_ivfpq_params(emb)
 
     def legs():
         # all rerank dials from ONE encode + ADC + widest-cut
         # exact-re-rank pass (lvec.top_k_ann_ivfpq_multirerank, r15
         # opt — row-identical to the independent per-dial calls)
         for r, ann in lvec.top_k_ann_ivfpq_multirerank(
-            emb,
-            q,
-            k=_TOP_K,
-            reranks=_PQ_RECALL_RERANK,
-            n_cells=_IVF_CELLS,
-            n_probe=_IVF_PROBE,
-            centroids=cents,
-            codebooks=books,
+            emb, q, centroids=cents, codebooks=books
         ):
             yield "ivfpq_rerank", r, ann
-        yield "ivfpq_exhaustive", _IVF_CELLS, lvec.top_k_ann_ivfpq(
+        yield "ivfpq_exhaustive", lvec.IVF_CELLS, lvec.top_k_ann_ivfpq(
             emb,
             q,
-            k=_TOP_K,
-            n_cells=_IVF_CELLS,
-            n_probe=_IVF_CELLS,
+            n_probe=lvec.IVF_CELLS,
             rerank=1 << 30,
             centroids=cents,
             codebooks=books,
@@ -1858,15 +1739,10 @@ def vec_top_k_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries.  Quality is pinned by tests/test_llm.py's
     recall@k-vs-bruteforce assertion instead."""
     emb = _load_embeddings(spark, sf_dir)
-    cents = lvec.train_centroids_kmeans(emb, n_cells=_IVF_CELLS)
-    return lvec.top_k_ann_ivf(
-        emb,
-        _query_set(emb),
-        k=_TOP_K,
-        n_cells=_IVF_CELLS,
-        n_probe=_IVF_PROBE,
-        centroids=cents,
-    ).orderBy("query_id", "rk")
+    cents = lvec.train_centroids_kmeans(emb)
+    return lvec.top_k_ann_ivf(emb, _query_set(emb), centroids=cents).orderBy(
+        "query_id", "rk"
+    )
 
 
 def vec_top_k_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1884,11 +1760,7 @@ def vec_top_k_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly, and recall@5 ≥ 0.6 at production dials."""
     emb = _load_embeddings(spark, sf_dir)
     return lvec.top_k_ann_ivfpq(
-        emb,
-        _query_set(emb),
-        k=_TOP_K,
-        n_cells=_IVF_CELLS,
-        n_probe=_IVF_PROBE,
+        emb, _query_set(emb), n_probe=lvec.IVF_PROBE
     ).orderBy("query_id", "rk")
 
 
@@ -1907,13 +1779,13 @@ def vec_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry); recall@5 vs bruteforce floor is unit-pinned."""
     emb = _load_embeddings(spark, sf_dir)
     path = scratch_dir("ivfpq_index", sf_dir)
-    params = lvec.build_ivfpq_index(emb, path, n_cells=_IVF_CELLS)
+    params = lvec.build_ivfpq_index(emb, path, n_cells=lvec.IVF_CELLS)
     return lvec.search_ivfpq_index(
         spark,
         path,
         _query_set(emb),
-        k=_TOP_K,
-        n_probe=_IVF_PROBE,
+        k=lvec.TOP_K,
+        n_probe=lvec.IVF_PROBE,
         params=params,
     ).orderBy("query_id", "rk")
 
@@ -1935,9 +1807,7 @@ def vec_ann_exhaustive_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lvec.top_k_ann_ivfpq(
         emb,
         _query_set(emb),
-        k=_TOP_K,
-        n_cells=_IVF_CELLS,
-        n_probe=_IVF_CELLS,  # probe every cell
+        n_probe=lvec.IVF_CELLS,  # probe every cell
         rerank=1 << 30,  # rerank·k ≥ any corpus → exact over all
     ).orderBy("query_id", "rk")
 
@@ -2156,7 +2026,7 @@ _FP_SQL = (
 )
 
 # IVF twin (llm.vectors.top_k_ann_ivf): same seeded centroids (the
-# _IVF_CELLS smallest vec_ids), same nearest-cell assignment with
+# lvec.IVF_CELLS smallest vec_ids), same nearest-cell assignment with
 # (sim DESC, cell_id) tie-break, same n_probe cell pruning.
 # Kept as a .format template so compositions (the serving pipeline)
 # can re-dial query predicate / k without duplicating the twin.
@@ -2194,31 +2064,31 @@ FROM scored WHERE rk <= {{k}}
 """
 
 _IVF_TOP_K_SQL = _IVF_TOP_K_TEMPLATE.format(
-    cells=_IVF_CELLS,
-    qpred=f"vec_id < {_N_QUERIES}",
-    probe=_IVF_PROBE,
-    k=_TOP_K,
+    cells=lvec.IVF_CELLS,
+    qpred=f"vec_id < {lvec.N_QUERIES}",
+    probe=lvec.IVF_PROBE,
+    k=lvec.TOP_K,
 )
 
 
 def _ivf_filtered_sql() -> str:
     """DuckDB twin of llm.vectors.search_ivf_index_filtered at the
-    entry's dials (``_IVF_PROBE`` of ``_IVF_CELLS``, the first
-    ``_N_QUERIES`` vectors as queries): same seeded centroids and cell
+    entry's dials (``lvec.IVF_PROBE`` of ``lvec.IVF_CELLS``, the first
+    ``lvec.N_QUERIES`` vectors as queries): same seeded centroids and cell
     assignment as the IVF twin, the corpus pre-filtered by
-    ``_FILTERED_ANN_PRED``, and each query's effective probe count
+    ``lvec.FILTERED_ANN_PRED``, and each query's effective probe count
     derived from the SAME widening ladder — the first rung whose top-p
-    cells hold ≥ ``_TOP_K`` filtered vectors, else the final
+    cells hold ≥ ``lvec.TOP_K`` filtered vectors, else the final
     probe-everything rung (expressed as a first-match CASE over
     cumulative per-cell-rank counts)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import probe_ladder
 
-    ladder = probe_ladder(_IVF_PROBE, _IVF_CELLS)
+    ladder = probe_ladder(lvec.IVF_PROBE, lvec.IVF_CELLS)
     eff_case = (
         "CASE "
         + " ".join(
             f"WHEN sum(CASE WHEN crk <= {p} THEN cnt ELSE 0 END) "
-            f">= {_TOP_K} THEN {p}"
+            f">= {lvec.TOP_K} THEN {p}"
             for p in ladder[:-1]
         )
         + f" ELSE {ladder[-1]} END"
@@ -2228,7 +2098,7 @@ WITH cents AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell_id,
          CAST(embedding AS DOUBLE[]) AS cv
   FROM (SELECT vec_id, embedding FROM embeddings
-        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT {_IVF_CELLS})
+        WHERE {VEC_OK_SQL} ORDER BY vec_id LIMIT {lvec.IVF_CELLS})
 ), c AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
   WHERE {VEC_OK_SQL}
@@ -2238,10 +2108,10 @@ WITH cents AS (
   QUALIFY row_number() OVER (PARTITION BY c.vec_id
       ORDER BY list_cosine_similarity(c.v, cents.cv) DESC, cents.cell_id) = 1
 ), cand AS (
-  SELECT * FROM assigned WHERE {_FILTERED_ANN_PRED}
+  SELECT * FROM assigned WHERE {lvec.FILTERED_ANN_PRED}
 ), q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id < {_N_QUERIES} AND {VEC_OK_SQL}
+  FROM embeddings WHERE vec_id < {lvec.N_QUERIES} AND {VEC_OK_SQL}
 ), qcells AS (
   SELECT q.query_id, q.qv, cents.cell_id,
          row_number() OVER (PARTITION BY q.query_id
@@ -2266,7 +2136,7 @@ WITH cents AS (
   JOIN eff e ON e.query_id = qc.query_id AND qc.crk <= e.eff_p
 )
 SELECT query_id, vec_id, round(cos, 6) AS cos_sim, CAST(rk AS INTEGER) AS rk
-FROM scored WHERE rk <= {_TOP_K} ORDER BY query_id, rk
+FROM scored WHERE rk <= {lvec.TOP_K} ORDER BY query_id, rk
 """
 
 _COS_CENTROID_SQL = f"""
@@ -2289,7 +2159,7 @@ def _top_k_sql(
     bucketed: bool, planes=None, corpus_pred: str = ""
 ) -> str:
     bucket_sel = (
-        f", {lvec.sign_bucket_sql('embedding', planes or lvec.PLANES)} AS bucket"
+        f", {lvec.sign_bucket_sql(planes or lvec.PLANES)} AS bucket"
         if bucketed
         else ""
     )
@@ -2301,7 +2171,7 @@ WITH c AS (
   WHERE {VEC_OK_SQL}{pred}
 ), q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv{bucket_sel}
-  FROM embeddings WHERE vec_id < {_N_QUERIES} AND {VEC_OK_SQL}
+  FROM embeddings WHERE vec_id < {lvec.N_QUERIES} AND {VEC_OK_SQL}
 ), scored AS (
   SELECT q.query_id, c.vec_id, list_cosine_similarity(c.v, q.qv) AS cos,
          row_number() OVER (
@@ -2311,17 +2181,11 @@ WITH c AS (
   FROM c JOIN q ON {join_cond}
 )
 SELECT query_id, vec_id, round(cos, 6) AS cos_sim, CAST(rk AS INTEGER) AS rk
-FROM scored WHERE rk <= {_TOP_K}
+FROM scored WHERE rk <= {lvec.TOP_K}
 """
 
 
-#: DuckDB twin of the deterministic PII seeding in doc_pii_redact.
-_PII_SEEDED = (
-    "text || ' contact user' || CAST(doc_id AS VARCHAR) || "
-    "'@mail.example.com from 10.2.' || CAST(doc_id % 256 AS VARCHAR) || "
-    "'.7 call 555-123-4567'"
-)
-_PII_CLEAN_SQL, _PII_COUNT_SQL = lq.redact_pii_sql(_PII_SEEDED)
+_PII_CLEAN_SQL, _PII_COUNT_SQL = lq.redact_pii_sql()
 
 def _training_freeze_sql(balance: str = "lang") -> str:
     """DuckDB twin of :func:`corpus_training_freeze` (no final
@@ -2335,9 +2199,7 @@ def _training_freeze_sql(balance: str = "lang") -> str:
     same optional stage :func:`_freeze_manifest` wires."""
     kept_cluster = (
         "SELECT doc_id, lang, n_tokens FROM ("
-        + lsmp.cluster_balance_sample_sql(
-            "good", cols="doc_id, lang, n_tokens"
-        )
+        + lsmp.cluster_balance_sample_sql(cols="doc_id, lang, n_tokens")
         + ")"
     )
     return (
@@ -2366,10 +2228,9 @@ def _training_freeze_sql(balance: str = "lang") -> str:
             kept_cluster
             if balance == "cluster"
             else lsmp.mixture_sample_sql(
-                _MIXTURE_WEIGHTS,
+                lsmp.MIXTURE_WEIGHTS,
                 table="good",
                 domain_expr="lang",
-                tokens_expr="n_tokens",
                 cols="doc_id, lang, n_tokens",
             )
         )
@@ -2417,10 +2278,9 @@ def _freeze_audit_sql() -> str:
         f"  FROM decont WHERE {_quality_score_sql()} > 0.5"
         "), kept AS ("
         + lsmp.mixture_sample_sql(
-            _MIXTURE_WEIGHTS,
+            lsmp.MIXTURE_WEIGHTS,
             table="good",
             domain_expr="lang",
-            tokens_expr="n_tokens",
             cols="doc_id, lang, n_tokens",
         )
         + "), drops AS ("
@@ -2491,14 +2351,10 @@ ORACLES = {
         "FROM documents"
     ),
     "doc_near_dup_banded": ldd.near_dup_banded_sql(),
-    "doc_pagerank": pagerank_sql(ldd.near_dup_banded_sql(), id_out="doc_id"),
-    "doc_graph_kcore": kcsql(ldd.near_dup_banded_sql(), id_out="doc_id"),
-    "doc_graph_triangles": triangle_counts_sql(
-        ldd.near_dup_banded_sql(), id_out="doc_id"
-    ),
-    "doc_pagerank_weighted": pagerank_sql(
-        ldd.near_dup_banded_sql(), id_out="doc_id", weight="jaccard"
-    ),
+    "doc_pagerank": pagerank_sql(ldd.near_dup_banded_sql()),
+    "doc_graph_kcore": kcsql(ldd.near_dup_banded_sql()),
+    "doc_graph_triangles": triangle_counts_sql(ldd.near_dup_banded_sql()),
+    "doc_pagerank_weighted": pagerank_sql(ldd.near_dup_banded_sql(), weight="jaccard"),
     "corpus_shuffle_order": (
         lsmp.corpus_shuffle_sql() + " ORDER BY position"
     ),
@@ -2535,7 +2391,6 @@ ORDER BY s.split
             "(SELECT * FROM documents WHERE "
             + lsmp.split_case_sql()
             + " IN ('val', 'test'))",
-            threshold=0.3,
         ),
     ),
     "corpus_keep_central": (
@@ -2544,7 +2399,7 @@ ORDER BY s.split
         "WITH j AS ("
         "  SELECT cc.doc_id, cc.cluster_id, pr.degree, pr.rank"
         f"  FROM ({lcc.connected_components_sql(ldd.near_dup_banded_sql())}) cc"
-        f"  JOIN ({pagerank_sql(ldd.near_dup_banded_sql(), id_out='doc_id')}) pr"
+        f"  JOIN ({pagerank_sql(ldd.near_dup_banded_sql())}) pr"
         "  USING (doc_id)"
         ") "
         "SELECT cluster_id, doc_id AS keep_doc_id, "
@@ -2557,12 +2412,11 @@ ORDER BY s.split
     ),
     "doc_band_bucket_profile": ldd.band_bucket_profile_sql(),
     "doc_prefix_contained": ldd.prefix_contained_sql(),
-    "doc_ngram_jaccard": ldd.ngram_jaccard_sql(threshold=0.3),
+    "doc_ngram_jaccard": ldd.ngram_jaccard_sql(),
     "doc_cross_corpus_jaccard": (
         ldd.ngram_jaccard_join_sql(
             "(SELECT * FROM documents WHERE doc_id % 2 = 0)",
             "(SELECT * FROM documents WHERE doc_id % 2 = 1)",
-            threshold=0.3,
         )
         + " ORDER BY id_l, id_r"
     ),
@@ -2625,9 +2479,7 @@ ORDER BY s.split
         f"  SELECT doc_id, lang, CAST(len({_TOK}) AS BIGINT) AS n_tokens"
         f"  FROM documents WHERE {_quality_score_sql()} > 0.5"
         ") SELECT doc_id, lang, n_tokens, cluster_id FROM ("
-        + lsmp.cluster_balance_sample_sql(
-            "good", cols="doc_id, lang, n_tokens, cluster_id"
-        )
+        + lsmp.cluster_balance_sample_sql(cols="doc_id, lang, n_tokens, cluster_id")
         + ") ORDER BY doc_id"
     ),
     "corpus_semantic_dedup": (
@@ -2701,14 +2553,10 @@ ORDER BY s.split
     "doc_pack_bins": lpk.pack_bins_sql(),
     "doc_weighted_sample": (
         "SELECT doc_id, n_chars, round(priority, 6) AS priority FROM ("
-        + lsmp.weighted_take_sql(
-            "documents", 100, "n_chars", cols="doc_id, n_chars"
-        )
+        + lsmp.weighted_take_sql()
         + ") ORDER BY doc_id"
     ),
-    "corpus_mixture_sample": lsmp.mixture_report_sql(
-        _MIXTURE_WEIGHTS, domain_expr="lang", tokens_expr=f"len({_TOK})"
-    ),
+    "corpus_mixture_sample": lsmp.mixture_report_sql(f"len({_TOK})"),
     "doc_dup_clusters_panel": (
         "WITH cc AS ("
         + lcc.connected_components_sql(ldd.near_dup_banded_sql())
@@ -2720,9 +2568,9 @@ ORDER BY s.split
         ldd.near_dup_banded_sql()
     ),
     "doc_decontaminated": (
-        ldec.decontaminate_sql(
-            corpus_where=_CORPUS_PRED.replace("<>", "!="),
-            benchmark_where=_BENCH_PRED,
+        ldec.contamination_overlap_sql(
+            f"(SELECT * FROM documents WHERE {_CORPUS_PRED.replace('<>', '!=')})",
+            f"(SELECT * FROM documents WHERE {_BENCH_PRED})",
         )
         + " ORDER BY doc_id"
     ),
@@ -2742,11 +2590,11 @@ ORDER BY s.split
         "UNION ALL "
         f"SELECT 'stratified', lang, count(*), CAST(sum({_SANE_CHARS_SQL}) AS BIGINT) "
         "FROM documents "
-        f"WHERE {lsmp.stratified_pred_sql('lang', STRAT_FRACTIONS)} "
+        f"WHERE {lsmp.stratified_pred_sql()} "
         "GROUP BY 2 "
         "UNION ALL "
         f"SELECT 'take', lang, count(*), CAST(sum({_SANE_CHARS_SQL}) AS BIGINT) FROM ("
-        + lsmp.take_per_stratum_sql("documents", "lang", _TAKE_K)
+        + lsmp.take_per_stratum_sql()
         + ") GROUP BY 2 ORDER BY op, grp"
     ),
     "doc_tfidf_top_terms": ltm.tf_idf_top_terms_sql(),
@@ -2760,7 +2608,7 @@ ORDER BY s.split
     "vec_cosine_near_dup": lvec.cosine_near_dup_sql(),
     "vec_cosine_near_dup_pinned": lvec.cosine_near_dup_sql(),
     "doc_simhash_buckets": (
-        f"SELECT {ldd.simhash_sql('text')} AS simhash, count(*) AS n_docs "
+        f"SELECT {ldd.simhash_sql()} AS simhash, count(*) AS n_docs "
         "FROM documents WHERE text IS NOT NULL GROUP BY 1"
     ),
     "doc_simhash_near_dup": ldd.simhash_near_dup_sql(),
@@ -2781,7 +2629,7 @@ ORDER BY s.split
         "length(text) AS n_chars_live FROM documents"
     ),
     "doc_lang_id": (
-        f"SELECT lang, {ltx.lang_id_sql('text')} AS lang_pred, count(*) AS n "
+        f"SELECT lang, {ltx.lang_id_sql()} AS lang_pred, count(*) AS n "
         "FROM documents GROUP BY 1, 2 ORDER BY lang, lang_pred"
     ),
     "doc_fingerprint": f"SELECT doc_id, {_FP_SQL} AS fp FROM documents",
@@ -2804,7 +2652,7 @@ ORDER BY s.split
     "vec_dedup_delta": f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         [{", ".join(lvec.sign_bucket_sql("embedding", planes) for planes in lvec._band_planes(4))}] AS bk
+         [{", ".join(lvec.sign_bucket_sql(planes) for planes in lvec._band_planes(4))}] AS bk
   FROM embeddings WHERE {VEC_OK_SQL}
 ), k AS (
   SELECT vec_id, unnest(range(3)) AS band, unnest(bk) AS bucket FROM e
@@ -2842,13 +2690,13 @@ ORDER BY emb.vec_id
         + ",\n".join(
             f"ivf{p} AS ("
             + _IVF_TOP_K_TEMPLATE.format(
-                cells=_IVF_CELLS,
-                qpred=f"vec_id < {_N_QUERIES}",
+                cells=lvec.IVF_CELLS,
+                qpred=f"vec_id < {lvec.N_QUERIES}",
                 probe=p,
-                k=_TOP_K,
+                k=lvec.TOP_K,
             )
             + ")"
-            for p in _RECALL_PROBES
+            for p in lvec.RECALL_PROBES
         )
         + ",\nt AS (SELECT CAST(count(*) AS BIGINT) AS truth FROM bf)\n"
         "SELECT * FROM (\n"
@@ -2857,7 +2705,7 @@ ORDER BY emb.vec_id
             f"m.matched, t.truth, round(m.matched * 1.0 / t.truth, 6) AS recall "
             f"FROM (SELECT CAST(count(*) AS BIGINT) AS matched FROM ivf{p} "
             f"JOIN bf USING (query_id, vec_id)) m CROSS JOIN t"
-            for p in _RECALL_PROBES
+            for p in lvec.RECALL_PROBES
         )
         + "\nUNION ALL\n"
         + "\nUNION ALL\n".join(
@@ -2889,16 +2737,10 @@ ORDER BY emb.vec_id
     # coalesce(strlen,0): the Spark fake decode treats a NULL payload
     # as b"" — the twin must score a NULL text identically
     "multimodal_integrity_audit": lmm.mixed_media_audit_sql(),
-    "doc_bm25_topk": ltm.bm25_topk_sql(_BM25_QUERY),
-    "doc_prf_expansion": ltm.prf_expansion_terms_sql(
-        _BM25_QUERY, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M
-    ),
-    "doc_bm25_prf_topk": ltm.bm25_prf_topk_sql(
-        _BM25_QUERY, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M
-    ),
-    "vec_mmr_rerank": lvec.mmr_rerank_sql(
-        k=_MMR_K, pool=_MMR_POOL, lam=_MMR_LAMBDA, n_queries=_N_QUERIES
-    ),
+    "doc_bm25_topk": ltm.bm25_topk_sql(),
+    "doc_prf_expansion": ltm.prf_expansion_terms_sql(),
+    "doc_bm25_prf_topk": ltm.bm25_prf_topk_sql(),
+    "vec_mmr_rerank": lvec.mmr_rerank_sql(),
     # serving composition: the IVF leg is the SAME template as
     # vec_ivf_index_search's twin (single query, list-k dial), fused
     # with the BM25 twin by the RRF formula, pool-cut on diversifiable
@@ -2910,14 +2752,13 @@ ORDER BY emb.vec_id
   QUALIFY row_number() OVER (ORDER BY f.rrf_score DESC, f.doc_id)
           <= {_SERVE_POOL}""",
         k=_SERVE_K,
-        lam=_MMR_LAMBDA,
-        pre_ctes=f"""lex AS ({ltm.bm25_topk_sql(_BM25_QUERY, k=_HYBRID_LIST_K)}),
-lexprf AS ({ltm.bm25_prf_topk_sql(_BM25_QUERY, k=_HYBRID_LIST_K, feedback_k=_PRF_FEEDBACK_K, expand_m=_PRF_EXPAND_M)}),
-ivf AS ({_IVF_TOP_K_TEMPLATE.format(cells=_IVF_CELLS, qpred=f"vec_id = {_HYBRID_QVEC_ID}", probe=_IVF_PROBE, k=_HYBRID_LIST_K)}),
+        pre_ctes=f"""lex AS ({ltm.bm25_topk_sql(k=_HYBRID_LIST_K)}),
+lexprf AS ({ltm.bm25_prf_topk_sql(k=_HYBRID_LIST_K)}),
+ivf AS ({_IVF_TOP_K_TEMPLATE.format(cells=lvec.IVF_CELLS, qpred=f"vec_id = {_HYBRID_QVEC_ID}", probe=lvec.IVF_PROBE, k=_HYBRID_LIST_K)}),
 unioned AS (
-  SELECT doc_id, 1.0 / ({_RRF_K} + rk) AS c FROM lex
-  UNION ALL SELECT doc_id, 1.0 / ({_RRF_K} + rk) FROM lexprf
-  UNION ALL SELECT vec_id, 1.0 / ({_RRF_K} + rk) FROM ivf
+  SELECT doc_id, 1.0 / ({ltm.RRF_K} + rk) AS c FROM lex
+  UNION ALL SELECT doc_id, 1.0 / ({ltm.RRF_K} + rk) FROM lexprf
+  UNION ALL SELECT vec_id, 1.0 / ({ltm.RRF_K} + rk) FROM ivf
 ), fused AS (
   SELECT doc_id, round(sum(c), 6) AS rrf_score FROM unioned GROUP BY doc_id
 ), emb_ok AS (
@@ -2927,7 +2768,7 @@ unioned AS (
     ),
     "doc_vocab_coverage": ltm.vocab_coverage_sql(),
     "doc_hybrid_search_rrf": f"""
-WITH lex AS ({ltm.bm25_topk_sql(_BM25_QUERY, k=_HYBRID_LIST_K)}),
+WITH lex AS ({ltm.bm25_topk_sql(k=_HYBRID_LIST_K)}),
 vec AS (
   SELECT c.vec_id AS doc_id,
          row_number() OVER (
@@ -2939,8 +2780,8 @@ vec AS (
               WHERE vec_id = {_HYBRID_QVEC_ID} AND {VEC_OK_SQL}) q
   QUALIFY rk <= {_HYBRID_LIST_K}
 ), unioned AS (
-  SELECT doc_id, 1.0 / ({_RRF_K} + rk) AS c FROM lex
-  UNION ALL SELECT doc_id, 1.0 / ({_RRF_K} + rk) FROM vec
+  SELECT doc_id, 1.0 / ({ltm.RRF_K} + rk) AS c FROM lex
+  UNION ALL SELECT doc_id, 1.0 / ({ltm.RRF_K} + rk) FROM vec
 ), fused AS (
   SELECT doc_id, round(sum(c), 6) AS rrf_score,
          CAST(count(*) AS INT) AS n_lists

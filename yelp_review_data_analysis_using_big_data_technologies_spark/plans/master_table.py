@@ -111,7 +111,7 @@ def yelp_master_table(
     cleaned = drop_nulls(dedup(kept))
     return (
         cleaned.withColumn("super_category", first_match_category("categories"))
-        .withColumn("sentiment", sentiment("stars"))
+        .withColumn("sentiment", sentiment())
         .withColumn("only_date", to_date_col("r_date"))
         .withColumn("state", decode_map("state", US_STATE_NAMES))
         .drop("r_date", "categories")
@@ -211,7 +211,7 @@ def synthetic_master_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "price_band",
             bucketize(
-                "o_totalprice", [(50_000.0, "low"), (150_000.0, "mid")], "high"
+                "o_totalprice", [(50_000.0, "low"), (150_000.0, "mid")]
             ),
         )
         .withColumn(
@@ -221,6 +221,6 @@ def synthetic_master_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("only_date", to_date_col("o_orderdate"))
         .withColumn("o_year", F.year("o_orderdate"))
         .withColumn("o_month", F.month("o_orderdate"))
-        .withColumn("o_dayname", day_name("o_orderdate"))
+        .withColumn("o_dayname", day_name())
         .drop("p_type", "n_regionkey")
     )

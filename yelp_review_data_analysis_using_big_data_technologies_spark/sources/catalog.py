@@ -70,15 +70,13 @@ def _canon_location(loc: str) -> str:
     return loc.rstrip("/")
 
 
-def create_database(
-    spark: SparkSession, name: str, comment: str | None = None
-) -> None:
+def create_database(spark: SparkSession, name: str) -> None:
     """CREATE DATABASE IF NOT EXISTS (the Glue database analog,
     reference main.tf:10-12)."""
-    ddl = f"CREATE DATABASE IF NOT EXISTS {_q(name)}"
-    if comment:
-        ddl += f" COMMENT {_q_str(comment)}"
-    spark.sql(ddl)
+    spark.sql(
+        f"CREATE DATABASE IF NOT EXISTS {_q(name)} "
+        f"COMMENT {_q_str('persistent catalog layer (S6)')}"
+    )
 
 
 def register_external_table(
@@ -164,11 +162,10 @@ def save_managed_table(
     df: DataFrame,
     table: str,
     database: str | None = None,
-    partition_by: list[str] | None = None,
 ) -> None:
-    """Engine-owned table, written in overwrite mode: data written
-    into the warehouse dir + catalog metadata in one step.
-    Partitioned managed tables get
+    """Engine-owned table, written in overwrite mode and partitioned
+    by ``region_name``: data written into the warehouse dir + catalog
+    metadata in one step.  Partitioned managed tables get
     partition pruning on catalog lookups, and ANALYZE (below) feeds
     CBO row counts.
 
@@ -181,9 +178,7 @@ def save_managed_table(
     engine-owned leftovers — delete it and retry once.  Any other
     conflict (table registered) propagates untouched."""
     name = _qualified(database, table)
-    writer = df.write.mode("overwrite").format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
+    writer = df.write.mode("overwrite").format("parquet").partitionBy("region_name")
     try:
         writer.saveAsTable(name)
     except Exception as exc:

@@ -149,13 +149,6 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — schema from the file footers like parquet; predicate
-    pushdown and column pruning work the same way (ORC carries
-    min/max/bloom indexes per stripe)."""
-    return spark.read.orc(path)
-
-
 def _normalize_ns_timestamps(df: DataFrame) -> DataFrame:
     """``events.ts`` is Parquet TIMESTAMP(NANOS), which has no Spark type; with
     ``spark.sql.legacy.parquet.nanosAsLong`` it lands as long nanos.

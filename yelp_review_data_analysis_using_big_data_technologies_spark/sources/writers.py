@@ -363,16 +363,11 @@ def upsert_by_key(
     overwrite_partitions_dynamic(merged, path, partition_by)
 
 
-def delete_where(
-    spark,
-    path: str,
-    predicate,
-    partition_by: list[str],
-) -> int:
-    """Targeted row deletion on a partitioned parquet table — the
-    retention / right-to-be-forgotten shape (r13): remove every row
-    matching ``predicate`` (a SQL string or Column) and rewrite ONLY
-    the partitions that held a match.  Returns the number of touched
+def delete_where(spark, path: str, predicate) -> int:
+    """Targeted row deletion on an ``o_year``-partitioned parquet
+    table — the retention / right-to-be-forgotten shape (r13): remove
+    every row matching ``predicate`` (a SQL string or Column) and
+    rewrite ONLY the partitions that held a match.  Returns the number of touched
     partitions.
 
     Mechanics mirror :func:`upsert_by_key`: one predicate-pushed,
@@ -396,6 +391,7 @@ def delete_where(
     rewrite.  SINGLE-WRITER by contract, like every read-modify-write
     here."""
     _validate_path(path)
+    partition_by = ["o_year"]
     existing = spark.read.parquet(path)
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     touched = (
@@ -428,7 +424,6 @@ def delete_where(
 def write_bucketed(
     df: DataFrame,
     table: str,
-    buckets: int,
     bucket_cols: list[str],
     sort_cols: list[str] | None = None,
     path: str | None = None,
@@ -436,7 +431,7 @@ def write_bucketed(
     """Bucketed (hash-clustered) parquet table for CO-LOCATED joins.
 
     Both sides of a recurring large-large join written with the same
-    bucket count and key join WITHOUT any Exchange: each task zips
+    bucket count (8) and key join WITHOUT any Exchange: each task zips
     bucket i with bucket i — the shuffle is paid once at write time
     and amortized over every subsequent join/aggregation on the key
     (see tests/test_plans.py guard).  ``sort_cols`` additionally
@@ -444,9 +439,7 @@ def write_bucketed(
     Bucketing requires the table catalog (``saveAsTable``); pass
     ``path`` to pin the files outside the warehouse dir."""
     _validate_path(table)
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        buckets, *bucket_cols
-    )
+    writer = df.write.mode("overwrite").format("parquet").bucketBy(8, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     if path:
@@ -462,16 +455,15 @@ def write_json(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def write_orc(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink — the other columnar interchange format warehouses
     expect (Hive-ecosystem consumers read ORC where everything else
-    reads parquet); same partitioning contract as
-    :func:`write_parquet`."""
+    reads parquet), partitioned by ``o_orderpriority``.  Read it back
+    with ``spark.read.orc``: schema from the file footers like
+    parquet, and predicate pushdown and column pruning work the same
+    way (ORC carries min/max/bloom indexes per stripe)."""
     _validate_path(path)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
+    df.write.mode("overwrite").partitionBy("o_orderpriority").orc(path)
 
 
 def write_csv(df: DataFrame, path: str) -> None:

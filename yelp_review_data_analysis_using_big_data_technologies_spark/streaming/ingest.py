@@ -12,7 +12,7 @@ micro-batch (read the accumulated table, anti-join, append) while the
 checkpoint tracks source offsets.
 
 Exactly-once: each micro-batch writes its admitted rows by
-OVERWRITING its own ``<batch_col>=<batch_id>`` partition directory —
+OVERWRITING its own ``ingest_batch=<batch_id>`` partition directory —
 a replayed batch (crash between write and checkpoint commit)
 re-derives the same admitted set against the same prior corpus and
 overwrites the same directory, so replays are idempotent by
@@ -35,10 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import (
-    BANDS,
-    NUM_HASHES,
     SHINGLE_N,
-    THRESHOLD,
     band_key_array,
     dedup_against_corpus,
     match_banded_candidates,
@@ -62,9 +59,14 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
 
 
-def read_before(
-    spark, path: str, batch_col: str, batch_id: int
-) -> DataFrame | None:
+#: Micro-batch ``doc_id`` boundaries the DuckDB twins of the streaming
+#: dedup ingests replay — batch 0 is ids below 200, batch 1 is
+#: [200, 350), batch 2 the rest; the registered entries feed their
+#: waves at the same cuts.
+INGEST_SPLITS = (200, 350)
+
+
+def read_before(spark, path: str, batch_id: int) -> DataFrame | None:
     """Accumulated state at ``path`` visible to micro-batch
     ``batch_id``: partitions of strictly EARLIER batches only, or
     ``None`` while no table exists yet
@@ -75,15 +77,15 @@ def read_before(
     commit leaves that batch's own partition on disk; a replay that
     read it back would reject every row as a SELF-duplicate and
     overwrite the partition with an empty result — silent loss.
-    Filtering ``batch_col < batch_id`` makes the replay see exactly
+    Filtering ``ingest_batch < batch_id`` makes the replay see exactly
     the state the original attempt saw (partition pruning keeps the
-    filter a directory-level skip, no data read).  ``batch_col`` stays
-    in the result; callers that do not need it drop it."""
+    filter a directory-level skip, no data read).  ``ingest_batch``
+    stays in the result; callers that do not need it drop it."""
     if not hadoop_table_exists(spark, path):
         return None
     df = spark.read.parquet(path)
-    if batch_col in df.columns:
-        df = df.filter(F.col(batch_col) < F.lit(batch_id))
+    if "ingest_batch" in df.columns:
+        df = df.filter(F.col("ingest_batch") < F.lit(batch_id))
     return df
 
 
@@ -109,7 +111,7 @@ def _delta_features(delta: DataFrame) -> DataFrame:
             "__sig",
             F.when(
                 F.col("__sz") > 0,
-                minhash_signature_from(F.col("__sh"), NUM_HASHES),
+                minhash_signature_from(F.col("__sh")),
             ),
         )
     )
@@ -123,7 +125,7 @@ def _delta_features(delta: DataFrame) -> DataFrame:
         "__sh",
         F.when(
             F.col("__sz") > 0,
-            band_key_array(F.col("__sig"), NUM_HASHES, BANDS),
+            band_key_array(F.col("__sig")),
         )
         .otherwise(F.array().cast("array<string>"))
         .alias("__bands"),
@@ -176,7 +178,7 @@ def stream_dedup_ingest_to_parquet(
             .filter(F.col("__rk") == 1)
             .drop("__rk")
         )
-        corpus = read_before(spark, table, "ingest_batch", batch_id)
+        corpus = read_before(spark, table, batch_id)
         admitted = (
             batch
             if corpus is None
@@ -193,10 +195,11 @@ def stream_dedup_ingest_to_parquet(
     drain(stream, checkpoint, _admit)
 
 
-def dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
+def dedup_ingest_sql() -> str:
     """DuckDB twin of a :func:`stream_dedup_ingest_to_parquet` run
-    whose micro-batches are the ``doc_id`` ranges cut at ``splits``
-    (batch 0 = ids below ``splits[0]``, …, last batch = the rest):
+    whose micro-batches are the ``doc_id`` ranges cut at
+    ``INGEST_SPLITS`` (batch 0 = ids below the first cut, …, last
+    batch = the rest):
     chained CTEs replay the sequential admission — batch k's exact and
     near predicates reference ONLY the union of earlier batches'
     ADMITTED rows, exactly like the streaming sink reading back its
@@ -205,8 +208,8 @@ def dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
     pairs whose ``id_a`` is admitted — sound because batches ascend in
     id and pairs carry ``id_a < id_b``."""
     pairs = near_dup_banded_sql()
-    bounds = [None, *splits, None]
-    n_batches = len(splits) + 1
+    bounds = [None, *INGEST_SPLITS, None]
+    n_batches = len(INGEST_SPLITS) + 1
     ctes = [f"__pairs AS ({pairs})"]
     admitted_union = None
     for k in range(n_batches):
@@ -311,13 +314,13 @@ def stream_doc_dedup_to_parquet(
         )
         # intra-batch near keep-first: drop id_b of every verified pair
         base, keys = _band_sides(feats)
-        intra_dropped = verified_pairs_from(base, keys, THRESHOLD).select(
+        intra_dropped = verified_pairs_from(base, keys).select(
             F.col("id_b").alias("doc_id")
         )
         admitted_ids = exact_first.join(
             intra_dropped, on="doc_id", how="left_anti"
         )
-        index = read_before(spark, index_path, "ingest_batch", batch_id)
+        index = read_before(spark, index_path, batch_id)
         if index is not None:
             # cross exact: any earlier SEEN doc with the same hash
             admitted_ids = (
@@ -331,9 +334,7 @@ def stream_doc_dedup_to_parquet(
             )
             # cross near: shared predicate builder with the batch path
             cbase, ckeys = _band_sides(index)
-            matched = match_banded_candidates(
-                base, keys, cbase, ckeys, "doc_id", THRESHOLD
-            )
+            matched = match_banded_candidates(base, keys, cbase, ckeys)
             admitted_ids = admitted_ids.join(
                 matched, on="doc_id", how="left_anti"
             )
@@ -350,9 +351,9 @@ def stream_doc_dedup_to_parquet(
     drain(stream, checkpoint, _admit)
 
 
-def doc_dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
+def doc_dedup_ingest_sql() -> str:
     """DuckDB twin of a :func:`stream_doc_dedup_to_parquet` run whose
-    micro-batches are the ``doc_id`` ranges cut at ``splits``.  Because
+    micro-batches are the ``doc_id`` ranges cut at ``INGEST_SPLITS``.  Because
     keep-first-over-all-seen is associative and the batches ascend in
     id, the whole sequential run collapses to two global predicates in
     plain id order — no chained CTEs: a doc survives iff it is the
@@ -361,11 +362,11 @@ def doc_dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
     (:func:`llm.dedup.near_dup_banded_sql`, the same band/hash
     constants as the engine)."""
     pairs = near_dup_banded_sql()
-    n = len(splits)
+    n = len(INGEST_SPLITS)
     batch = (
         "CASE "
         + " ".join(
-            f"WHEN doc_id < {s} THEN {i}" for i, s in enumerate(splits)
+            f"WHEN doc_id < {s} THEN {i}" for i, s in enumerate(INGEST_SPLITS)
         )
         + f" ELSE {n} END"
     )
@@ -418,7 +419,7 @@ def stream_line_dedup_to_parquet(
     from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import line_dedup
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
-        prior = read_before(batch_df.sparkSession, table, "ingest_batch", batch_id)
+        prior = read_before(batch_df.sparkSession, table, batch_id)
         if prior is not None:
             # sha2 set of every kept line of strictly earlier batches
             prior = (
@@ -442,16 +443,16 @@ def stream_line_dedup_to_parquet(
     drain(stream, checkpoint, _admit)
 
 
-def line_dedup_ingest_sql(splits: tuple[int, ...] = (200, 350)) -> str:
+def line_dedup_ingest_sql() -> str:
     """DuckDB twin of a :func:`stream_line_dedup_to_parquet` run whose
-    micro-batches are the ``doc_id`` ranges cut at ``splits``: because
+    micro-batches are the ``doc_id`` ranges cut at ``INGEST_SPLITS``: because
     keep-first admission is associative over ordered batches, the
     whole sequential run collapses to ONE window — an eligible line
     instance survives iff it is the row_number()=1 occurrence of its
     text in ``(batch, doc_id, pos)`` order."""
-    n = len(splits)
+    n = len(INGEST_SPLITS)
     batch = "CASE " + " ".join(
-        f"WHEN doc_id < {s} THEN {i}" for i, s in enumerate(splits)
+        f"WHEN doc_id < {s} THEN {i}" for i, s in enumerate(INGEST_SPLITS)
     ) + f" ELSE {n} END"
     return f"""
 WITH base AS (

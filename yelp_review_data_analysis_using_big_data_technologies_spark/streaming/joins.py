@@ -56,51 +56,20 @@ def stream_stream_interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     )
 
 
-def stream_static_enrich(
-    stream: DataFrame,
-    dim: DataFrame,
-    on,
-) -> DataFrame:
-    """Stream-static inner join: enrich a live stream against a BATCH
-    dimension table.  No state is buffered for the static side — it is
-    re-executed per micro-batch — and with the broadcast hint every
-    executor joins map-side with zero stream-side shuffle: the right
-    default for dimension-sized enrichment at any stream rate.  The
-    same body runs in batch mode, which is how the oracle checks it.
-
-    Dim-refresh caveat: for a PATH-based parquet ``dim`` the file
-    listing is snapshotted when the DataFrame is created, so
-    re-execution re-reads the SAME files — an external overwrite of
-    the dim path is not picked up (and deleting the old files fails
-    the next micro-batch's tasks).  To follow a refreshing dimension,
-    re-create the dim frame per batch inside ``foreachBatch``, or use
-    a catalog/table format whose snapshots refresh."""
-    return stream.join(F.broadcast(dim), on=on, how="inner")
-
-
-def stream_merge_to_parquet(
-    result: DataFrame,
-    path: str,
-    checkpoint: str,
-    keys: list[str],
-    partition_by: list[str],
-    version_col: str | None = None,
-) -> None:
+def stream_merge_to_parquet(result: DataFrame, path: str, checkpoint: str) -> None:
     """Run a stream to completion (``availableNow``), MERGING each
-    micro-batch into the parquet table at ``path``: same-key rows are
-    replaced, new keys insert, only touched partitions rewrite
-    (``writers.upsert_by_key``).  First batch bootstraps the table.
+    micro-batch into the ``event_type``-partitioned parquet table at
+    ``path``: same-``user_id`` rows are replaced, new keys insert,
+    only touched partitions rewrite (``writers.upsert_by_key``).
+    First batch bootstraps the table.
 
-    Default replace semantics are LAST-DELIVERED-WINS — correct only
-    when the source delivers each key's versions in order, exactly
-    once.  At-least-once CDC sources replay and overlap batches, and a
-    stale row in a later batch would then REGRESS its key.  Pass
-    ``version_col`` (the CDC event's ordering column — LSN, commit ts,
-    sequence number) for LATEST-VERSION-WINS: the merged table
-    converges to the per-key max-version state under any delivery
-    order, overlap, or replay (``writers.latest_version_rows``; the
-    bootstrap batch is collapsed through the same window so the table
-    is key-unique from birth).
+    Replace semantics are LATEST-VERSION-WINS on ``ts`` (the CDC
+    event's ordering column): at-least-once CDC sources replay and
+    overlap batches, and a stale row in a later batch must not
+    REGRESS its key, so the merged table converges to the per-key
+    max-version state under any delivery order, overlap, or replay
+    (``writers.latest_version_rows``; the bootstrap batch is collapsed
+    through the same window so the table is key-unique from birth).
 
     Bootstrap-vs-merge is decided by
     :func:`sources.writers.hadoop_table_exists`, which asks the path's
@@ -115,14 +84,12 @@ def stream_merge_to_parquet(
         write_parquet,
     )
 
+    keys, partition_by = ["user_id"], ["event_type"]
+
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if not hadoop_table_exists(spark, path):
-            first = (
-                batch_df
-                if version_col is None
-                else latest_version_rows(None, batch_df, keys, version_col)
-            )
+            first = latest_version_rows(None, batch_df, keys, "ts")
             write_parquet(first, path, partition_by=partition_by)
         else:
             upsert_by_key(
@@ -131,24 +98,19 @@ def stream_merge_to_parquet(
                 batch_df,
                 keys=keys,
                 partition_by=partition_by,
-                version_col=version_col,
+                version_col="ts",
             )
 
     drain(result, checkpoint, _merge)
 
 
 def stream_increment_counts_to_parquet(
-    events: DataFrame,
-    path: str,
-    checkpoint: str,
-    keys: list[str],
-    sum_col: str | None = None,
-    sum_src: str | None = None,
-    partition_by: list[str] | None = None,
+    events: DataFrame, path: str, checkpoint: str
 ) -> None:
     """Incremental MATERIALIZED-VIEW maintenance: each micro-batch's
-    per-key partial counts (and optional value sums) merge ADDITIVELY
-    into the parquet aggregate table — existing keys gain the batch's
+    per-``event_type`` partial counts ``n`` and ``value`` sums ``s``
+    merge ADDITIVELY into the ``event_type``-partitioned parquet
+    aggregate table — existing keys gain the batch's
     partials, new keys insert.  The complement of
     :func:`stream_merge_to_parquet`'s replace-merge: replace maintains
     latest-state views, additive maintains COUNT/SUM views — the two
@@ -156,15 +118,11 @@ def stream_increment_counts_to_parquet(
     incremental instead of nightly full recomputes.
 
     Per batch: one partial agg over the (small) micro-batch, an outer
-    merge against the view keyed rows, one rewrite.  With
-    ``partition_by`` (a subset of ``keys``) the rewrite is
+    merge against the view keyed rows, one rewrite.  The rewrite is
     PARTITION-PRUNED, the same shape as ``upsert_by_key``: only the
     partitions the batch's partials touch are read, merged, and
     dynamically overwritten — the rewritten byte volume follows the
-    batch's key locality, not the view's width.  A time-derived
-    partition key (hour/day) makes steady-state batches touch one or
-    two partitions of an ever-growing view.  Unpartitioned, the whole
-    (aggregate-sized) view rewrites per batch.
+    batch's key locality, not the view's width.
 
     Exactly-once needs more than foreachBatch's replay here: additive
     merges are NOT naturally idempotent (a replayed batch would add
@@ -174,8 +132,7 @@ def stream_increment_counts_to_parquet(
     overwrite is not atomic, so a crash mid-commit can leave some
     touched partitions committed and others not — a replayed batch
     re-merges exactly the partitions whose watermark has not reached
-    it and leaves committed ones untouched (unpartitioned views use
-    the single global watermark; one directory, one commit).  The view
+    it and leaves committed ones untouched.  The view
     bootstraps only where no data file exists
     (:func:`sources.writers.hadoop_table_exists`); an existing view
     that cannot be read raises instead of being reinitialized."""
@@ -188,17 +145,12 @@ def stream_increment_counts_to_parquet(
         write_parquet,
     )
 
-    if partition_by and not set(partition_by) <= set(keys):
-        raise ValueError(
-            "partition_by must be a subset of the aggregation keys: "
-            f"{partition_by} vs {keys}"
-        )
+    keys = partition_by = ["event_type"]
 
     def _agg(df: DataFrame) -> DataFrame:
-        aggs = [F.count(F.lit(1)).alias("n")]
-        if sum_col is not None:
-            aggs.append(F.sum(sum_src or sum_col).alias(sum_col))
-        return df.groupBy(*keys).agg(*aggs)
+        return df.groupBy(*keys).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
+        )
 
     def _additive(current: DataFrame, partial: DataFrame) -> DataFrame:
         return (
@@ -206,11 +158,7 @@ def stream_increment_counts_to_parquet(
             .groupBy(*keys)
             .agg(
                 F.sum("n").alias("n"),
-                *(
-                    [F.sum(sum_col).alias(sum_col)]
-                    if sum_col is not None
-                    else []
-                ),
+                F.sum("s").alias("s"),
                 F.max("__max_batch_id").alias("__max_batch_id"),
             )
         )
@@ -224,8 +172,6 @@ def stream_increment_counts_to_parquet(
         its partials — and the rewrite would land in a NEW directory
         (k=1 beside k=01).  Inference off → directory strings → cast
         to the batch frame's own partition dtypes."""
-        if not partition_by:
-            return spark.read.parquet(path)
         conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
         prev = spark.conf.get(conf, "true")
         spark.conf.set(conf, "false")
@@ -246,51 +192,44 @@ def stream_increment_counts_to_parquet(
             write_parquet(partial, path, partition_by=partition_by)
             return
         current = _read_current(spark, partial)
-        if partition_by:
-            if not partial.head(1):
-                return  # empty batch: zero partitions to touch
-            # The replay skip must be decided PER PARTITION, not from
-            # one global max: the multi-partition dynamic overwrite is
-            # not atomic, so a crash mid-commit can leave SOME touched
-            # partitions carrying this batch's watermark while others
-            # never committed.  A global `max >= batch_id` skip would
-            # then drop the uncommitted partitions' partials forever.
-            # Partitions already at >= batch_id are left untouched
-            # (their directories are not rewritten); the rest merge.
-            touched = partial.select(*partition_by).distinct().collect()
-            pruned = current.filter(
-                partition_prune_predicate(current, touched, partition_by)
-            )
-            done = {
-                tuple(r[c] for c in partition_by)
-                for r in pruned.groupBy(*partition_by)
-                .agg(F.max("__max_batch_id").alias("__mb"))
-                .collect()
-                if r["__mb"] is not None and r["__mb"] >= batch_id
-            }
-            todo = [
-                r
-                for r in touched
-                if tuple(r[c] for c in partition_by) not in done
-            ]
-            if not todo:
-                return  # replayed batch: every partition already merged
-            pruned_todo = current.filter(
-                partition_prune_predicate(current, todo, partition_by)
-            )
-            partial_todo = partial.filter(
-                partition_prune_predicate(partial, todo, partition_by)
-            )
-            # materialize before overwriting the partitions being read
-            out = _additive(pruned_todo, partial_todo).localCheckpoint(
-                eager=True
-            )
-            overwrite_partitions_dynamic(out, path, partition_by)
-            return
-        applied = current.agg(F.max("__max_batch_id")).first()[0]
-        if applied is not None and batch_id <= applied:
-            return  # replayed batch: already merged (single directory)
-        out = _additive(current, partial).localCheckpoint(eager=True)
-        write_parquet(out, path)
+        if not partial.head(1):
+            return  # empty batch: zero partitions to touch
+        # The replay skip must be decided PER PARTITION, not from
+        # one global max: the multi-partition dynamic overwrite is
+        # not atomic, so a crash mid-commit can leave SOME touched
+        # partitions carrying this batch's watermark while others
+        # never committed.  A global `max >= batch_id` skip would
+        # then drop the uncommitted partitions' partials forever.
+        # Partitions already at >= batch_id are left untouched
+        # (their directories are not rewritten); the rest merge.
+        touched = partial.select(*partition_by).distinct().collect()
+        pruned = current.filter(
+            partition_prune_predicate(current, touched, partition_by)
+        )
+        done = {
+            tuple(r[c] for c in partition_by)
+            for r in pruned.groupBy(*partition_by)
+            .agg(F.max("__max_batch_id").alias("__mb"))
+            .collect()
+            if r["__mb"] is not None and r["__mb"] >= batch_id
+        }
+        todo = [
+            r
+            for r in touched
+            if tuple(r[c] for c in partition_by) not in done
+        ]
+        if not todo:
+            return  # replayed batch: every partition already merged
+        pruned_todo = current.filter(
+            partition_prune_predicate(current, todo, partition_by)
+        )
+        partial_todo = partial.filter(
+            partition_prune_predicate(partial, todo, partition_by)
+        )
+        # materialize before overwriting the partitions being read
+        out = _additive(pruned_todo, partial_todo).localCheckpoint(
+            eager=True
+        )
+        overwrite_partitions_dynamic(out, path, partition_by)
 
     drain(events, checkpoint, _merge)

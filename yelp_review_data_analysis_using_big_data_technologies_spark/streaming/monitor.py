@@ -42,6 +42,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging imp
     staging_scope,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift import (
+    DRIFT_CUR_SQL,
     chi2_drift_frozen,
     chi2_drift_sql,
     chi2_freeze_reference,
@@ -53,6 +54,11 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.drift
     psi_profile_sql,
 )
 from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import drain
+
+#: The monitor twins replay the drift entries' current window as the
+#: three ``event_id % 3`` micro-batches the registered monitor entries
+#: stream.
+_BATCH_SQLS = [f"{DRIFT_CUR_SQL} AND event_id % 3 = {k}" for k in range(3)]
 
 
 def _drain_scored(
@@ -82,15 +88,13 @@ def _drain_scored(
     drain(stream, checkpoint, _write)
 
 
-def _per_batch_union(
-    batch_sqls: list[str], twin: Callable[[str], str], order_by: str
-) -> str:
+def _per_batch_union(twin: Callable[[str], str], order_by: str) -> str:
     """DuckDB form of a monitor run: the batch twin per micro-batch,
     tagged with its ``ingest_batch`` index and unioned (batches are
     independent given the frozen reference)."""
     parts = [
         f"SELECT {k} AS ingest_batch, * FROM (" + twin(bsql) + ")"
-        for k, bsql in enumerate(batch_sqls)
+        for k, bsql in enumerate(_BATCH_SQLS)
     ]
     return (
         "SELECT * FROM (\n"
@@ -172,13 +176,12 @@ def stream_ks_monitor(
         release_staging(tag=ref_tag)
 
 
-def stream_ks_monitor_sql(ref_sql: str, batch_sqls: list[str]) -> str:
+def stream_ks_monitor_sql() -> str:
     """DuckDB twin of :func:`stream_ks_monitor` — the batch KS twin
     per micro-batch, batch-tagged and unioned (batches are
     independent given the frozen reference)."""
     return _per_batch_union(
-        batch_sqls,
-        lambda bsql: ks_2sample_sql(ref_sql, bsql),
+        lambda bsql: ks_2sample_sql(bsql),
         "ingest_batch",
     )
 
@@ -208,24 +211,22 @@ def stream_chi2_monitor(
     )
 
 
-def stream_chi2_monitor_sql(ref_sql: str, batch_sqls: list[str]) -> str:
+def stream_chi2_monitor_sql() -> str:
     """DuckDB twin of :func:`stream_chi2_monitor` — the batch χ² twin
     per micro-batch, batch-tagged and unioned."""
     return _per_batch_union(
-        batch_sqls,
-        lambda bsql: chi2_drift_sql(ref_sql, bsql),
+        lambda bsql: chi2_drift_sql(bsql),
         "ingest_batch, category",
     )
 
 
-def stream_psi_monitor_sql(ref_sql: str, batch_sqls: list[str]) -> str:
+def stream_psi_monitor_sql() -> str:
     """DuckDB twin of :func:`stream_psi_monitor` — the batch PSI twin
     per micro-batch, batch-tagged and unioned (each micro-batch's
     profile is independent given the frozen reference, so the
     streaming run equals the per-batch batch computation by
     construction)."""
     return _per_batch_union(
-        batch_sqls,
-        lambda bsql: psi_profile_sql(ref_sql, bsql),
+        lambda bsql: psi_profile_sql(bsql),
         "ingest_batch, bucket",
     )
