@@ -31,7 +31,9 @@ unnamed calls in its body that spread them on.  These rules can only
 hide a parameter with one value in use.
 
 ``ALLOWED`` names the parameters kept settable anyway; each carries
-the reason.
+the reason.  Two narrower checks name the commonest cases with their
+own message: a defaulted parameter no call sets, and a parameter of a
+private helper every call passes the same value.
 
 A second scan covers the converse: no call outside the tests passes a
 package function its own default — a literal equal to it, or the very
@@ -412,16 +414,21 @@ def _single(files):
     calls in ``files``.  A function with no visible call uses its
     defaults alone.  A required parameter of a function some file
     passes as a value is skipped: its calls are not all visible."""
+    return sorted(f"{f.key}.{p}" for f, p in _single_params(files))
+
+
+def _single_params(files):
+    """``(_Function, param)`` of each parameter :func:`_single` names."""
     funcs, as_values, _ = _scan(files)
-    return sorted(
-        f"{f.key}.{p}"
+    return [
+        (f, p)
         for name, fs in funcs.items()
         for f in fs
         for p in f.params
         if (p in f.defaults or name not in as_values)
         and len(f.values[p]) == 1
         and None not in f.values[p]
-    )
+    ]
 
 
 def _redundant(files):
@@ -514,6 +521,30 @@ def test_every_parameter_has_two_values_in_use():
         "parameters with one value in use across the non-test calls "
         "(inline the value, or one module constant shared with the "
         "SQL twin, and delete the parameter):\n  " + "\n  ".join(single)
+    )
+
+
+def test_every_option_is_set_by_some_call():
+    unset = [
+        f"{f.key}.{p}"
+        for f, p in _single_params(_files())
+        if f.values[p] == {f.default_keys.get(p)} and f"{f.key}.{p}" not in ALLOWED
+    ]
+    assert unset == [], (
+        "defaulted parameters no non-test call sets (inline the "
+        "default and delete the parameter):\n  " + "\n  ".join(unset)
+    )
+
+
+def test_no_private_helper_parameter_is_fixed_by_every_call():
+    fixed = [
+        f"{f.key}.{p}"
+        for f, p in _single_params(_files())
+        if f.node.name.startswith("_") and f"{f.key}.{p}" not in ALLOWED
+    ]
+    assert fixed == [], (
+        "private helper parameters every non-test call passes the same "
+        "value (inline it and delete the parameter):\n  " + "\n  ".join(fixed)
     )
 
 
