@@ -23,6 +23,10 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relat
     equi_join,
     stack_legs,
 )
+from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import (
+    FINITE_VALUE_SQL,
+    finite_value,
+)
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm import vectors as lvec
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans import analytics, llm_queries
 from yelp_review_data_analysis_using_big_data_technologies_spark.plans.master_table import (
@@ -157,21 +161,6 @@ def _q_join_inner_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
         )
         .orderBy("n_name")
-    )
-
-
-def _q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Outer-join surface — customers with zero orders kept."""
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    j = customer.join(
-        orders.withColumnRenamed("o_custkey", "c_custkey"), on="c_custkey", how="left"
-    )
-    return (
-        j.groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-        .filter(F.col("n_orders") == 0)
-        .select("c_custkey", "n_orders")
     )
 
 
@@ -383,7 +372,7 @@ def _q_events_distributed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = (
         load_table(spark, sf_dir, "events")
-        .filter(_finite_value())
+        .filter(finite_value())
         .select("event_id", "event_type", "value")
     )
     return distributed_rank(ev).orderBy(
@@ -399,7 +388,7 @@ def _q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     events measure family (r7/r9)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.anomaly import iqr_outlier_profile
 
-    ev = load_table(spark, sf_dir, "events").filter(_finite_value())
+    ev = load_table(spark, sf_dir, "events").filter(finite_value())
     return iqr_outlier_profile(ev)
 
 
@@ -413,7 +402,7 @@ def _q_events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     double sum, exactly the shape the magnitude arm protects."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.ohlc import ohlc_bars
 
-    ev = load_table(spark, sf_dir, "events").filter(_finite_value())
+    ev = load_table(spark, sf_dir, "events").filter(finite_value())
     return ohlc_bars(ev)
 
 
@@ -428,44 +417,8 @@ def _q_events_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as in the rest of the events family (r7)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import ewma_by_key
 
-    events = load_table(spark, sf_dir, "events").filter(_finite_value())
+    events = load_table(spark, sf_dir, "events").filter(finite_value())
     return ewma_by_key(events)
-
-
-#: measure-magnitude sanity bound (r9 float-cancellation class, the
-#: double-precision sibling of the r8 SANE_CHARS_MAX arm): a ±1e14
-#: spike makes every double SUM order-dependent beyond the 6 dp
-#: contract (an ulp at 1e14 is ~0.016, and Spark adds shuffle
-#: partials in layout order while DuckDB adds serially — measured
-#: drift ~0.7 absolute across 1/3/17/32-partition layouts at
-#: sf0.001).  Measures beyond ±1e9 are corrupt-sensor territory for
-#: this schema (fixture values are O(10³)) and are excluded exactly
-#: like NaN/Inf; within the bound, n·ulp error stays far below the
-#: 6 dp rounding at any realistic group size.
-SANE_VALUE_MAX = 1e9
-
-
-def _finite_value():
-    """Keep NULL rows, drop non-finite OR insane-magnitude measures —
-    the entry-level contract for moment/order-statistic/histogram
-    operators (r7; magnitude arm r9).  A single NaN/Inf measurement
-    otherwise job-aborts the histogram (ANSI int-cast overflow),
-    crashes DuckDB's stddev (Out of Range), or silently diverges the
-    MAD (Spark median skips NaN, DuckDB's propagates it); a ±1e14
-    spike makes distributed sums layout-dependent past the rounding
-    contract (see :data:`SANE_VALUE_MAX`).  NULLs stay: they are
-    counted by ``count(*)`` and skipped by every aggregate
-    identically on both engines, so the filter is a no-op on every
-    clean fixture.  SQL twin: ``_FINITE_VALUE_SQL``."""
-    c = F.col("value")
-    return c.isNull() | (
-        ~F.isnan(c) & (F.abs(c) <= F.lit(SANE_VALUE_MAX))
-    )
-
-
-_FINITE_VALUE_SQL = (
-    f"(value IS NULL OR (isfinite(value) AND abs(value) <= {SANE_VALUE_MAX!r}))"
-)
 
 
 def _q_events_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,7 +429,7 @@ def _q_events_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle).  Moments round at 4dp: distributed summation order
     differs from the oracle's serial order in the last ulp, which the
     rounding absorbs (same discipline as every avg in §2.9)."""
-    ev = load_table(spark, sf_dir, "events").filter(_finite_value())
+    ev = load_table(spark, sf_dir, "events").filter(finite_value())
     per = ev.select(
         "event_type",
         "value",
@@ -916,9 +869,7 @@ def _id_waves(df: DataFrame, id_col: str, splits: tuple[int, ...]) -> list:
 
 def _staged_json_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage ``documents`` out as JSON-lines and re-read with the
-    explicit schema — THE shared JSON round-trip leg (single entry and
-    ingest panel both call this, so format/option fixes propagate and
-    the two can't fight over differently-written stage dirs)."""
+    explicit schema — the JSON round-trip leg of the ingest panel."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_json
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_json
 
@@ -930,7 +881,7 @@ def _staged_json_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_csv_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage ``nation`` out as headered CSV and re-read with the
-    explicit schema — the shared CSV round-trip leg."""
+    explicit schema — the CSV round-trip leg of the ingest panel."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_csv
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_csv
 
@@ -942,7 +893,7 @@ def _staged_csv_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _staged_orc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage ``orders`` out as priority-partitioned ORC and re-read
-    (partition discovery) — the shared ORC round-trip leg."""
+    (partition discovery) — the ORC round-trip leg of the ingest panel."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.sources.writers import write_orc
 
     orders = load_table(spark, sf_dir, "orders")
@@ -961,8 +912,10 @@ def _q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         staged.join(F.broadcast(region), staged.n_regionkey == region.r_regionkey)
         .groupBy("r_name")
-        .agg(F.count(F.lit(1)).alias("n_nations"))
-        .orderBy("r_name")
+        .agg(
+            F.count(F.lit(1)).alias("n_nations"),
+            F.sum("n_nationkey").alias("sum_nationkey"),
+        )
     )
 
 
@@ -1184,7 +1137,7 @@ def _q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windows import tumbling_ohlc
 
-    src = stream_events(spark, sf_dir).filter(_finite_value())
+    src = stream_events(spark, sf_dir).filter(finite_value())
     return run_available_now(
         tumbling_ohlc(src), "stream_ohlc_sink"
     )
@@ -1206,16 +1159,16 @@ def _q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_stream_windows_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.10 panel — the tumbling (1h) and sliding (1h/30m) streaming
-    window counts of ``stream_tumbling_counts`` and
-    ``stream_sliding_counts`` in ONE driver row, tagged with a
-    ``shape`` column.  Packing both window shapes into one entry keeps
-    them inside the driver's 50-row correctness window while freeing
-    slots for the stream-stream join and KMeans-IVF entries (the
-    single tumbling/sliding entries stay registered past the cap for
-    the local replica and bench)."""
-    tumb = _q_stream_tumbling(spark, sf_dir).withColumn("shape", F.lit("tumbling"))
-    slide = _q_stream_sliding(spark, sf_dir).withColumn("shape", F.lit("sliding"))
-    return tumb.unionByName(slide)
+    window counts in ONE driver row, tagged by ``op``.  Packing both
+    window shapes into one entry keeps them inside the driver's 50-row
+    correctness window."""
+    return stack_legs(
+        {
+            "tumbling": _q_stream_tumbling(spark, sf_dir),
+            "sliding": _q_stream_sliding(spark, sf_dir),
+        },
+        ["window_start", "event_type", "n", "sum_value"],
+    )
 
 
 def _q_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1760,7 +1713,7 @@ def _q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets) instead of ``width_bucket``, so the oracle runs the
     identical expression.  One partial-agg groupBy; the dashboard
     distribution view over a column no percentile sketch exposes."""
-    ev = load_table(spark, sf_dir, "events").filter(_finite_value())
+    ev = load_table(spark, sf_dir, "events").filter(finite_value())
     lo, step, nb = 0.0, 50.0, 8
     # clamp in DOUBLE space BEFORE floor/cast: floor() returns BIGINT
     # and a huge-but-finite value (1e300/50) overflows the later int
@@ -1830,9 +1783,7 @@ def _q_customer_fuzzy_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     cust = load_table(spark, sf_dir, "customer")
-    return fuzzy_pairs_sorted_neighborhood(
-        cust, block_col=F.substring("c_name", 1, 14)
-    ).orderBy("id_a", "id_b")
+    return fuzzy_pairs_sorted_neighborhood(cust).orderBy("id_a", "id_b")
 
 
 def _q_events_analytics_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1841,8 +1792,7 @@ def _q_events_analytics_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash: ordered funnel, cohort retention, transition matrix,
     fixed-bucket histogram, hourly gap-fill (moving avg + running
     total), and the linear-interpolation join.  Packing them keeps the
-    whole events-analytics family inside the driver's 50-row window
-    while the single-operator twins stay registered past the cap; the
+    whole events-analytics family inside the driver's 50-row window; the
     ``n`` slot is "the entry's natural BIGINT" (users, rows, or the
     interpolation row's user_id) and v1-v3 carry the doubles."""
     fun = _q_funnel_steps(spark, sf_dir).select(
@@ -1898,7 +1848,7 @@ def _q_doc_text_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-text panel — per-language corpus stats, the n-gram
     heuristic language-ID confusion counts, and the top-10 document-
     frequency shingles, normalized to ``(op, key, n, v1-v4)`` under
-    one driver hash (the singles stay registered past the window)."""
+    one driver hash."""
     stats = llm_queries.doc_text_stats(spark, sf_dir).select(
         F.col("lang").alias("key"),
         F.col("n_docs").cast("long").alias("n"),
@@ -1930,7 +1880,7 @@ def _q_value_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact arithmetic, so the two agree bit-for-bit."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.functions.udafs import median_abs_deviation
 
-    ev = load_table(spark, sf_dir, "events").filter(_finite_value())
+    ev = load_table(spark, sf_dir, "events").filter(finite_value())
     return (
         ev.groupBy("event_type")
         .agg(
@@ -1981,7 +1931,6 @@ def _q_json_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").alias("sum_chars"),
             F.count_distinct("source").alias("n_sources"),
         )
-        .orderBy("lang")
     )
 
 
@@ -1999,49 +1948,35 @@ def _q_orc_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
             F.count_distinct("o_custkey").alias("n_custs"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
 def _q_ingest_roundtrip_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S4 panel — the JSON-lines round-trip (documents), the
     headered-CSV round-trip (nation⋈region), and the partitioned-ORC
-    round-trip (orders, partition discovery on re-read) staged,
-    re-read with explicit schemas, aggregated, and stacked under a
-    format tag.  Every branch goes through the SAME staging helper as
-    its single-entry twin (``_staged_json_documents`` etc.), so a
-    format/option fix propagates to both and the two variants share
-    one consistently-written stage dir.  The oracle reads the
-    ORIGINAL parquet for all three branches, so one green hash proves
+    round-trip (orders, partition discovery on re-read), normalized to
+    ``(op, key, n, v1, v2)`` and stacked: ``n`` is each leg's row
+    count, v1-v2 its measures as doubles.  The oracle reads the
+    ORIGINAL parquet for all three legs, so one green hash proves
     every ingest path is lossless."""
-    jstaged = _staged_json_documents(spark, sf_dir)
-    j = jstaged.groupBy(F.col("lang").alias("grp")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_chars").alias("m"),
-    ).select(F.lit("json").alias("fmt"), "grp", "n", "m")
-
-    cstaged = _staged_csv_nation(spark, sf_dir)
-    region = load_table(spark, sf_dir, "region")
-    c = (
-        cstaged.join(F.broadcast(region), cstaged.n_regionkey == region.r_regionkey)
-        .groupBy(F.col("r_name").alias("grp"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_nationkey").alias("m"),
-        )
-        .select(F.lit("csv").alias("fmt"), "grp", "n", "m")
+    j = _q_json_ingest_roundtrip(spark, sf_dir).select(
+        F.col("lang").alias("key"),
+        F.col("n_docs").alias("n"),
+        F.col("sum_chars").cast("double").alias("v1"),
+        F.col("n_sources").cast("double").alias("v2"),
     )
-
-    o = (
-        _staged_orc_orders(spark, sf_dir)
-        .groupBy(F.col("o_orderpriority").alias("grp"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("o_custkey").alias("m"),
-        )
-        .select(F.lit("orc").alias("fmt"), "grp", "n", "m")
+    c = _q_csv_ingest_roundtrip(spark, sf_dir).select(
+        F.col("r_name").alias("key"),
+        F.col("n_nations").alias("n"),
+        F.col("sum_nationkey").cast("double").alias("v1"),
     )
-    return j.unionByName(c).unionByName(o)
+    o = _q_orc_ingest_roundtrip(spark, sf_dir).select(
+        F.col("o_orderpriority").alias("key"),
+        F.col("n_orders").alias("n"),
+        F.col("sum_price").cast("double").alias("v1"),
+        F.col("n_custs").cast("double").alias("v2"),
+    )
+    return stack_legs({"json": j, "csv": c, "orc": o}, ["key", "n", "v1", "v2"])
 
 
 def _staged_partitioned_master(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2549,7 +2484,7 @@ def _q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     InjectRuntimeFilter only applies when its own heuristics fire.
 
     Scale shape: the sketch is one bit_or partial aggregate folded to
-    ≤ num_bits/64 map words in a single row (bounded 1-row broadcast,
+    NUM_BITS/64 dense words in a single row (bounded 1-row broadcast,
     whitelisted BNLJ class); fact rows failing the bit test never
     enter the join Exchange.  At 100 TB with a 4%-selective dimension
     that is the difference between shuffling 4% and 100% of lineitem.
@@ -2561,7 +2496,7 @@ def _q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier").where(F.col("s_nationkey") == 7)
-    joined = bloom_pruned_join(li, sup, num_bits=1 << 16)
+    joined = bloom_pruned_join(li, sup)
     return (
         joined.groupBy(
             F.year("l_shipdate").alias("ship_year"),
@@ -2582,9 +2517,10 @@ def _q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the window holds one hash-twinned representative per operator family
 # (panel entries such as join_variants_panel, ingest_roundtrip_panel
 # and doc_profile stack several operators under one hash).  Rows-only
-# entries (no DuckDB twin) and the single-operator twins the panels
-# subsume stay past the window; they are still oracled by
-# `python scripts/check_oracle.py`, which covers every entry.
+# entries (no DuckDB twin) stay past the window; every entry is
+# oracled by `python scripts/check_oracle.py`.  A panel's leg is
+# registered on its own only when bench.py or perfbench times it
+# alone (tests/test_shared_twins.py checks this).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "flagship_category_distribution": _q_flagship,
     "master_table": _q_master_table,
@@ -2700,7 +2636,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dashboard_pivot_priority": _q_pivot,
     "events_asof_join": _q_asof_join,
     "events_hourly_gapfill": _q_events_gapfill,
-    "doc_lang_id": llm_queries.doc_lang_id,
     "doc_token_chunks": llm_queries.doc_token_chunks,
     "sql_string_filter": _q_sql_string_filter,
     "duplicate_keys_diagnostic": _q_duplicate_keys,
@@ -2710,20 +2645,14 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "customer_fuzzy_matches": _q_customer_fuzzy_matches,
     "dashboard_engagement": analytics.engagement_by_category,
     "dashboard_top_nations": analytics.top_nations_by_customers,
-    "dashboard_price_quantiles": _q_quantiles,
     "events_interpolate_join": _q_interpolate_join,
     "events_funnel_steps": _q_funnel_steps,
     "events_cohort_retention": _q_cohort_retention,
     "events_transition_matrix": _q_transition_matrix,
-    "doc_dup_clusters": llm_queries.doc_dup_clusters,
-    "doc_dup_clusters_star": llm_queries.doc_dup_clusters_star,
     "vec_quantize_int8": llm_queries.vec_quantize_int8,
     "corpus_mixture_sample": llm_queries.corpus_mixture_sample,
     "doc_exact_dedup": llm_queries.doc_exact_dedup,
     "grouped_top_k_revenue": _q_grouped_top_k,
-    "events_value_histogram": _q_value_histogram,
-    "stream_stream_join": _q_stream_stream_join,
-    "stream_static_enrich": _q_stream_static_enrich,
     "doc_near_dup_removal": llm_queries.doc_near_dup_removal,
     "dedup_full_row": _q_dedup_full_row,
     "doc_text_stats": llm_queries.doc_text_stats,
@@ -2741,7 +2670,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "doc_tfidf_cosine_pairs": llm_queries.doc_tfidf_cosine_pairs,
     "dashboard_yearly_trend": analytics.yearly_trend,
     "stream_tumbling_counts": _q_stream_tumbling,
-    "stream_sliding_counts": _q_stream_sliding,
     "dashboard_share_by_flag": analytics.share_by_flag,
     "dashboard_day_of_week": analytics.day_of_week_activity,
     "dashboard_most_popular_category": analytics.most_popular_category,
@@ -2750,28 +2678,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "doc_simhash_buckets": llm_queries.doc_simhash_buckets,
     "doc_near_dup_minhash_ml": llm_queries.doc_near_dup_minhash_ml,
     "doc_token_counts": llm_queries.doc_token_counts,
-    "doc_fingerprint": llm_queries.doc_fingerprint,
-    "doc_quality_bands": llm_queries.doc_quality_bands,
-    "doc_shingle_top10": _q_shingle_explode,
-    "dashboard_totals": analytics.totals,
-    "dashboard_avg_rating": analytics.avg_rating,
-    "dashboard_most_active_day": analytics.most_active_day,
     "dashboard_rollup_slicers": analytics.rollup_slicers,
-    "dashboard_cube_slicers": analytics.cube_slicers,
-    "dashboard_grouping_sets": analytics.grouping_sets_slicers,
     "dashboard_approx_profile": analytics.approx_profile,
     "dashboard_sketch_rollup": analytics.sketch_rollup,
     "json_extract": _q_json_extract,
     "sql_flagship_distribution": _sql_query(_SQL_FLAGSHIP),
-    "join_left_outer_zero_orders": _q_join_left_outer,
-    "join_semi": _q_join_semi,
-    "join_anti": _q_join_anti,
-    "union_all_by_name": _q_union_all,
-    "intersect": _q_intersect,
-    "except_all": _q_except_all,
-    "json_ingest_roundtrip": _q_json_ingest_roundtrip,
-    "csv_ingest_roundtrip": _q_csv_ingest_roundtrip,
-    "orc_ingest_roundtrip": _q_orc_ingest_roundtrip,
     "join_bloom_pruned": _q_join_bloom_pruned,
     "doc_dup_spans": llm_queries.doc_dup_spans,
     "doc_cross_corpus_jaccard": llm_queries.doc_cross_corpus_jaccard,
@@ -2866,6 +2777,25 @@ _FUZZY_ORACLE = (
 
 _INTERP_ORACLE = _interp_sql()
 
+_VALUE_HISTOGRAM_SQL = (
+    "SELECT event_type, "
+    "CAST(floor(least(7.0, greatest(0.0, (value - 0.0) / 50.0))) AS INT) "
+    f"AS bucket, count(*) AS n FROM events WHERE {FINITE_VALUE_SQL} "
+    "GROUP BY 1, 2 ORDER BY event_type, bucket"
+)
+
+_SHINGLE_TOP10_SQL = (
+    "WITH sh AS ("
+    "  SELECT DISTINCT doc_id, unnest(list_transform("
+    "    range(len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')) - 2), "
+    "    i -> concat_ws(' ', regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')[i+1], "
+    "         regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')[i+2], "
+    "         regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')[i+3]))) AS shingle "
+    "  FROM documents WHERE len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')) >= 3"
+    ") SELECT shingle, count(*) AS n FROM sh "
+    "GROUP BY shingle ORDER BY n DESC, shingle LIMIT 10"
+)
+
 ORACLES: dict[str, str] = {
     "flagship_category_distribution": (
         "SELECT l_returnflag, count(*) AS n FROM lineitem "
@@ -2902,37 +2832,7 @@ ORACLES: dict[str, str] = {
         "JOIN nation n ON c.c_nationkey = n.n_nationkey "
         "GROUP BY n.n_name ORDER BY n.n_name"
     ),
-    "join_left_outer_zero_orders": (
-        "SELECT c.c_custkey, count(o.o_orderkey) AS n_orders FROM customer c "
-        "LEFT JOIN orders o ON c.c_custkey = o.o_custkey "
-        "GROUP BY c.c_custkey HAVING count(o.o_orderkey) = 0"
-    ),
-    "join_semi": (
-        "SELECT c_custkey, c_mktsegment FROM customer c "
-        "WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"
-    ),
-    "join_anti": (
-        "SELECT c_custkey, c_mktsegment FROM customer c "
-        "WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)"
-    ),
     "distinct_projection": "SELECT DISTINCT o_orderpriority FROM orders",
-    "union_all_by_name": (
-        "SELECT nationkey, side, count(*) AS n FROM ("
-        "  SELECT c_nationkey AS nationkey, 'customer' AS side FROM customer"
-        "  UNION ALL"
-        "  SELECT s_nationkey AS nationkey, 'supplier' AS side FROM supplier"
-        ") GROUP BY nationkey, side"
-    ),
-    "intersect": (
-        "SELECT c_nationkey AS nationkey FROM customer "
-        "INTERSECT "
-        "SELECT s_nationkey AS nationkey FROM supplier"
-    ),
-    "except_all": (
-        "SELECT n_nationkey AS nationkey FROM nation "
-        "EXCEPT ALL "
-        "SELECT DISTINCT s_nationkey AS nationkey FROM supplier"
-    ),
     # TRY_CAST twice: to JSON (malformed props → NULL, matching
     # Spark's get_json_object / try_parse_json) and to INTEGER
     # (non-numeric k → NULL, matching Spark's try_cast).  Residual
@@ -3000,7 +2900,7 @@ ORACLES: dict[str, str] = {
         "round(covar_pop(value, CAST(hour(ts) AS DOUBLE)) / "
         "NULLIF(stddev_pop(value) * stddev_pop(CAST(hour(ts) AS DOUBLE)), 0)"
         ", 4) + 0 AS corr_value_hour "
-        f"FROM events WHERE {_FINITE_VALUE_SQL} "
+        f"FROM events WHERE {FINITE_VALUE_SQL} "
         "GROUP BY event_type ORDER BY event_type"
     ),
     "dq_constraints_panel": (
@@ -3047,16 +2947,6 @@ ORACLES: dict[str, str] = {
         "event_type NULLS FIRST, value NULLS FIRST) IS NULL) AS is_current "
         "FROM events ORDER BY user_id, valid_from_us, event_id"
     ),
-    "dashboard_totals": (
-        "SELECT (SELECT count(DISTINCT l_partkey) FROM lineitem) AS total_parts, "
-        "(SELECT count(*) FROM lineitem) AS total_lineitems, "
-        "(SELECT count(DISTINCT o_custkey) FROM orders) AS total_customers"
-    ),
-    "dashboard_avg_rating": (
-        "SELECT round(avg(l_quantity), 2) AS avg_quantity, "
-        "round(avg(l_extendedprice * (1 - l_discount)), 2) AS avg_net_price "
-        "FROM lineitem"
-    ),
     "dashboard_share_by_flag": (
         "SELECT l_returnflag, count(*) AS n, "
         "round(count(*) * 100.0 / sum(count(*)) OVER (), 2) AS pct "
@@ -3070,10 +2960,6 @@ ORACLES: dict[str, str] = {
     "dashboard_day_of_week": (
         "SELECT dayname(o_orderdate) AS dayname, o_orderpriority AS priority, "
         "count(*) AS n_orders FROM orders GROUP BY 1, 2"
-    ),
-    "dashboard_most_active_day": (
-        "SELECT dayname(o_orderdate) AS dayname, count(*) AS n_orders "
-        "FROM orders GROUP BY 1 ORDER BY n_orders DESC, dayname LIMIT 1"
     ),
     "dashboard_engagement": (
         "SELECT l_returnflag, "
@@ -3098,10 +2984,6 @@ ORACLES: dict[str, str] = {
         "SELECT l_returnflag, l_linestatus, count(*) AS n, "
         "round(sum(l_extendedprice), 2) AS sum_price "
         "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)"
-    ),
-    "dashboard_cube_slicers": (
-        "SELECT l_returnflag, l_linestatus, count(*) AS n "
-        "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"
     ),
     "window_trend_panel": (
         "WITH yearly AS ("
@@ -3158,49 +3040,18 @@ ORACLES: dict[str, str] = {
         "FROM events WHERE ts IS NOT NULL GROUP BY 1, 2"
     ),
     "stream_windows_panel": (
-        "SELECT date_trunc('hour', ts) AS window_start, event_type, "
-        "count(*) AS n, round(sum(value), 2) + 0 AS sum_value, "
-        "'tumbling' AS shape FROM events WHERE ts IS NOT NULL GROUP BY 1, 2 "
+        "SELECT 'tumbling' AS op, date_trunc('hour', ts) AS window_start, "
+        "event_type, count(*) AS n, round(sum(value), 2) + 0 AS sum_value "
+        "FROM events WHERE ts IS NOT NULL GROUP BY 2, 3 "
         "UNION ALL "
-        "SELECT window_start, event_type, n, sum_value, 'sliding' AS shape "
+        "SELECT 'sliding', window_start, event_type, n, sum_value "
         f"FROM ({sliding_counts_sql()})"
     ),
-    "dashboard_grouping_sets": (
-        "SELECT l_returnflag, l_linestatus, count(*) AS n, "
-        "round(sum(l_extendedprice), 2) AS sum_price FROM lineitem "
-        "GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), "
-        "(l_returnflag), ())"
-    ),
-    "stream_sliding_counts": sliding_counts_sql(),
     # dashboard_approx_profile: intentionally no oracle — sketch
     # estimates (HLL++, KLL) differ per engine; error bounds are
     # unit-tested in tests/test_plans.py.
     # stateful_running_profile: intentionally no oracle — update-mode
     # emission cadence is streaming-only; batch-equality is unit-tested.
-    "json_ingest_roundtrip": (
-        "SELECT lang, count(*) AS n_docs, "
-        "CAST(sum(n_chars) AS BIGINT) AS sum_chars, "
-        "count(DISTINCT source) AS n_sources "
-        "FROM documents GROUP BY lang ORDER BY lang"
-    ),
-    "csv_ingest_roundtrip": (
-        "SELECT r.r_name, count(*) AS n_nations FROM nation n "
-        "JOIN region r ON n.n_regionkey = r.r_regionkey "
-        "GROUP BY r.r_name ORDER BY r.r_name"
-    ),
-    "orc_ingest_roundtrip": (
-        "SELECT o_orderpriority, count(*) AS n_orders, "
-        "round(sum(o_totalprice), 2) AS sum_price, "
-        "count(DISTINCT o_custkey) AS n_custs "
-        "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"
-    ),
-    "stream_static_enrich": (
-        "SELECT c.c_mktsegment, e.event_type, count(*) AS n_events, "
-        "round(sum(e.value), 2) AS sum_value "
-        "FROM events e JOIN customer c ON e.user_id = c.c_custkey "
-        "GROUP BY c.c_mktsegment, e.event_type "
-        "ORDER BY c.c_mktsegment, e.event_type"
-    ),
     "events_sessionize": sessionize_sql(),
     "events_range_join_sessions": (
         "WITH o AS ("
@@ -3263,24 +3114,6 @@ ORACLES: dict[str, str] = {
         "CAST(count(*) FILTER (WHERE o_orderpriority = '5-LOW') AS BIGINT) AS p5 "
         "FROM orders GROUP BY 1 ORDER BY o_year"
     ),
-    "dashboard_price_quantiles": (
-        "SELECT o_orderstatus, "
-        "round(quantile_cont(o_totalprice, 0.25), 2) AS q25, "
-        "round(quantile_cont(o_totalprice, 0.5), 2) AS q50, "
-        "round(quantile_cont(o_totalprice, 0.75), 2) AS q75 "
-        "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
-    ),
-    "doc_shingle_top10": (
-        "WITH sh AS ("
-        "  SELECT DISTINCT doc_id, unnest(list_transform("
-        "    range(len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')) - 2), "
-        "    i -> concat_ws(' ', regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')[i+1], "
-        "         regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')[i+2], "
-        "         regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')[i+3]))) AS shingle "
-        "  FROM documents WHERE len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+')) >= 3"
-        ") SELECT shingle, count(*) AS n FROM sh "
-        "GROUP BY shingle ORDER BY n DESC, shingle LIMIT 10"
-    ),
     "salted_join_segments": (
         "SELECT c.c_mktsegment, count(*) AS n_orders, "
         "round(sum(o.o_totalprice), 2) AS sum_price "
@@ -3324,14 +3157,19 @@ ORACLES: dict[str, str] = {
         ")"
     ),
     "ingest_roundtrip_panel": (
-        "SELECT 'json' AS fmt, lang AS grp, count(*) AS n, "
-        "CAST(sum(n_chars) AS BIGINT) AS m FROM documents GROUP BY lang "
+        "SELECT 'json' AS op, lang AS key, count(*) AS n, "
+        "CAST(sum(n_chars) AS DOUBLE) AS v1, "
+        "CAST(count(DISTINCT source) AS DOUBLE) AS v2 "
+        "FROM documents GROUP BY lang "
         "UNION ALL "
-        "SELECT 'csv', r.r_name, count(*), CAST(sum(n.n_nationkey) AS BIGINT) "
+        "SELECT 'csv', r.r_name, count(*), CAST(sum(n.n_nationkey) AS DOUBLE), "
+        "CAST(NULL AS DOUBLE) "
         "FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey "
         "GROUP BY r.r_name "
         "UNION ALL "
-        "SELECT 'orc', o_orderpriority, count(*), count(DISTINCT o_custkey) "
+        "SELECT 'orc', o_orderpriority, count(*), "
+        "CAST(round(sum(o_totalprice), 2) AS DOUBLE), "
+        "CAST(count(DISTINCT o_custkey) AS DOUBLE) "
         "FROM orders GROUP BY o_orderpriority"
     ),
     "dashboard_tiles": (
@@ -3347,16 +3185,6 @@ ORACLES: dict[str, str] = {
         "  SELECT dayname(o_orderdate) AS dayname, count(*) AS n_orders "
         "  FROM orders GROUP BY 1 ORDER BY n_orders DESC, dayname LIMIT 1"
         ")"
-    ),
-    "stream_stream_join": (
-        "SELECT c.user_id, c.event_id AS c_event_id, c.ts AS l_ts, "
-        "p.ts AS r_ts, p.value AS p_value "
-        "FROM (SELECT user_id, event_id, ts FROM events "
-        "      WHERE event_type = 'click') c "
-        "JOIN (SELECT user_id, ts, value FROM events "
-        "      WHERE event_type = 'purchase') p "
-        "ON c.user_id = p.user_id "
-        "AND p.ts BETWEEN c.ts - INTERVAL 1 HOUR AND c.ts"
     ),
     "events_interpolate_join": _INTERP_ORACLE,
     "events_funnel_steps": (
@@ -3380,15 +3208,9 @@ ORACLES: dict[str, str] = {
         "ORDER BY step"
     ),
     "customer_fuzzy_matches": _FUZZY_ORACLE,
-    "events_value_histogram": (
-        "SELECT event_type, "
-        "CAST(floor(least(7.0, greatest(0.0, (value - 0.0) / 50.0))) AS INT) "
-        f"AS bucket, count(*) AS n FROM events WHERE {_FINITE_VALUE_SQL} "
-        "GROUP BY 1, 2 ORDER BY event_type, bucket"
-    ),
     "events_value_mad": (
         "SELECT event_type, round(mad(value), 6) AS value_mad "
-        f"FROM events WHERE {_FINITE_VALUE_SQL} "
+        f"FROM events WHERE {FINITE_VALUE_SQL} "
         "GROUP BY event_type ORDER BY event_type"
     ),
     "events_heavy_hitters": (
@@ -3551,17 +3373,13 @@ ORACLES["events_changepoint_profile"] = _changepoint_sql()
 # finite-value-filtered relation the Spark entry aggregates
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.decay import ewma_by_key_sql as _ewma_sql
 
-ORACLES["events_time_decay_profile"] = _ewma_sql(
-    table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})",
-)
+ORACLES["events_time_decay_profile"] = _ewma_sql()
 
 # generated twin: naive row_number argmin/argmax formulation of the
 # one-pass min/max(struct) OHLC selection (filter contract inside)
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.ohlc import ohlc_bars_sql as _ohlc_sql
 
-ORACLES["events_ohlc_bars"] = _ohlc_sql(
-    table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})",
-)
+ORACLES["events_ohlc_bars"] = _ohlc_sql()
 
 # shared-SQL twin: the WINDOW clause is ANSI and both engines define
 # the rank family identically under ties
@@ -3573,9 +3391,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.anoma
     iqr_outlier_profile_sql as _iqr_sql,
 )
 
-ORACLES["events_anomaly_profile"] = _iqr_sql(
-    table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})",
-)
+ORACLES["events_anomaly_profile"] = _iqr_sql()
 
 # generated twin: epoch-floor window grid + the batch OHLC argmin/
 # argmax formulation over the same gated relation
@@ -3583,9 +3399,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.streaming.windo
     tumbling_ohlc_sql as _stream_ohlc_sql,
 )
 
-ORACLES["stream_ohlc_bars"] = _stream_ohlc_sql(
-    table=f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})"
-)
+ORACLES["stream_ohlc_bars"] = _stream_ohlc_sql()
 
 # generated twin: the naive per-key window formulation the two-level
 # rank decomposition must equal
@@ -3599,7 +3413,7 @@ ORACLES["customer_rfm_segments"] = analytics.RFM_SQL
 ORACLES["events_session_attribution"] = _ATTRIBUTION_SQL
 
 ORACLES["events_distributed_rank"] = (
-    _drank_sql(f"(SELECT * FROM events WHERE {_FINITE_VALUE_SQL})")
+    _drank_sql()
     + " ORDER BY event_type, rnk, event_id"
 )
 
@@ -3687,7 +3501,7 @@ ORACLES["events_analytics_panel"] = (
     "SELECT 'histogram', concat_ws('|', event_type, "
     "CAST(bucket AS VARCHAR)), NULL, CAST(n AS BIGINT), "
     "NULL, NULL, NULL "
-    f"FROM ({ORACLES['events_value_histogram']}) "
+    f"FROM ({_VALUE_HISTOGRAM_SQL}) "
     "UNION ALL "
     "SELECT 'gapfill', CAST(NULL AS VARCHAR), epoch_us(h), "
     "CAST(n AS BIGINT), CAST(sum_value AS DOUBLE), "
@@ -3708,11 +3522,11 @@ ORACLES["doc_text_panel"] = (
     "UNION ALL "
     "SELECT 'lang_id', concat_ws('|', lang, lang_pred), CAST(n AS BIGINT), "
     "NULL, NULL, NULL, NULL "
-    f"FROM ({ORACLES['doc_lang_id']}) "
+    f"FROM ({llm_queries._LANG_ID_SQL}) "
     "UNION ALL "
     "SELECT 'shingle_top10', shingle, CAST(n AS BIGINT), "
     "NULL, NULL, NULL, NULL "
-    f"FROM ({ORACLES['doc_shingle_top10']})"
+    f"FROM ({_SHINGLE_TOP10_SQL})"
 )
 
 

@@ -39,15 +39,9 @@ SKIP = {
     "stream_incremental_matview",
     "stream_windows_panel",
     "stream_joins_panel",
-    "stream_stream_join",
-    "stream_static_enrich",
     "stream_tumbling_counts",
-    "stream_sliding_counts",
     "stateful_running_profile",
     "ingest_roundtrip_panel",
-    "json_ingest_roundtrip",
-    "csv_ingest_roundtrip",
-    "orc_ingest_roundtrip",
     # r10: run the availableNow drift scoring (one shared
     # _stream_monitor drain) on invocation; the returned frame is the
     # profile-table read-back

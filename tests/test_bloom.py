@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.bloom import (
+    NUM_BITS,
     build_bloom,
     bloom_prune,
     bloom_pruned_join,
@@ -43,9 +44,7 @@ def fact(spark):
 
 
 def test_inner_equals_plain_join(dim, fact):
-    got = bloom_pruned_join(
-        fact, dim, num_bits=1 << 10
-    )
+    got = bloom_pruned_join(fact, dim)
     want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
     assert _rows(got, "l_suppkey", "payload", "d_name") == _rows(
         want, "l_suppkey", "payload", "d_name"
@@ -60,24 +59,19 @@ def test_string_keys(spark):
         [(w, i) for i, w in enumerate(["alpha", "beta", "γάμμα", "delta", "x"] * 50)],
         "l_suppkey string, payload int",
     )
-    got = bloom_pruned_join(
-        fact, dim, num_bits=1 << 8
-    )
+    got = bloom_pruned_join(fact, dim)
     want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
     assert _rows(got, "l_suppkey", "payload") == _rows(want, "l_suppkey", "payload")
 
 
 def test_empty_dim_yields_empty_join(spark, fact):
     empty = spark.createDataFrame([], "s_suppkey int, d_name string")
-    got = bloom_pruned_join(
-        fact, empty, num_bits=1 << 10
-    )
+    got = bloom_pruned_join(fact, empty)
     assert got.count() == 0
 
 
 def test_null_fact_keys_pruned_early(spark, dim, fact):
-    sketch = build_bloom(dim, num_bits=1 << 10)
-    pruned = bloom_prune(fact, sketch, num_bits=1 << 10)
+    pruned = bloom_prune(fact, build_bloom(dim))
     assert pruned.where(F.col("l_suppkey").isNull()).count() == 0
 
 
@@ -85,14 +79,12 @@ def test_fpp_bounded(spark):
     # disjoint keyspaces: every kept row is a false positive
     dim = spark.range(0, 1000).withColumnRenamed("id", "s_suppkey")
     fact = spark.range(10_000, 30_000).withColumnRenamed("id", "l_suppkey")
-    # textbook sizing for 1000 keys at 1%: m = 9,585 bits, rounded up
-    # to the power of two 2^14; at NUM_HASHES = 5 hashes the expected
-    # rate is (1 - e^(-5·1000/2^14))^5 ≈ 0.13%
-    num_bits = 1 << 14
-    sketch = build_bloom(dim, num_bits=num_bits)
-    kept = bloom_prune(fact, sketch, num_bits=num_bits).count()
-    # sized for 1%; 5x headroom keeps the pin regression-only
-    assert kept <= 0.05 * 20_000, f"fpp blowout: {kept}/20000 false positives"
+    # textbook sizing for 1000 keys at 1% needs m = 9,585 bits; at
+    # NUM_BITS = 2^16 and NUM_HASHES = 5 the expected rate is
+    # (1 - e^(-5·1000/2^16))^5 ≈ 0.0003%
+    kept = bloom_prune(fact, build_bloom(dim)).count()
+    # a 1% bound: headroom keeps the pin regression-only
+    assert kept <= 0.01 * 20_000, f"fpp blowout: {kept}/20000 false positives"
 
 
 def test_sketch_partition_invariant(spark):
@@ -102,8 +94,7 @@ def test_sketch_partition_invariant(spark):
     want = None
     for parts in (1, 3, 17):
         df = spark.createDataFrame(keys, "s_suppkey int").repartition(parts)
-        sketch = build_bloom(df, num_bits=1 << 12)
-        got = list(sketch.collect()[0][0])
+        got = list(build_bloom(df).collect()[0][0])
         if want is None:
             want = got
         else:
@@ -112,19 +103,13 @@ def test_sketch_partition_invariant(spark):
 
 def test_sketch_is_bounded(spark):
     # the sketch relation is ONE row holding a dense array of EXACTLY
-    # num_bits/64 words no matter the dimension size — that is both
+    # NUM_BITS/64 words no matter the dimension size — that is both
     # the broadcast-safety contract and the O(1)-ordinal-lookup
     # contract (a map sketch would linear-scan per fact row)
     dim = spark.range(0, 50_000).withColumnRenamed("id", "s_suppkey")
-    sketch = build_bloom(dim, num_bits=1 << 12)
-    rows = sketch.collect()
+    rows = build_bloom(dim).collect()
     assert len(rows) == 1
-    assert len(rows[0][0]) == (1 << 12) // 64
-
-
-def test_bad_num_bits_rejected(spark, dim):
-    with pytest.raises(ValueError, match="power of two"):
-        build_bloom(dim, num_bits=1000)
+    assert len(rows[0][0]) == NUM_BITS // 64
 
 
 def test_prune_filter_precedes_fact_shuffle(spark, dim, fact):
@@ -135,11 +120,7 @@ def test_prune_filter_precedes_fact_shuffle(spark, dim, fact):
     big_dim = dim.crossJoin(spark.range(1).drop("id"))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        got = bloom_pruned_join(
-            fact,
-            big_dim,
-            num_bits=1 << 10,
-        )
+        got = bloom_pruned_join(fact, big_dim)
         plan = got._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set(
@@ -161,47 +142,32 @@ def test_sketch_persists_and_reloads(spark, tmp_path):
     fact = spark.range(0, 10_000).select(
         (F.col("id") % 2_000).alias("l_suppkey"), F.col("id").alias("payload")
     )
-    sketch = build_bloom(dim, num_bits=1 << 12)
     path = str(tmp_path / "sketch")
-    sketch.write.mode("overwrite").parquet(path)
+    build_bloom(dim).write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    pruned = bloom_prune(fact, reloaded, num_bits=1 << 12)
-    joined = pruned.join(dim, pruned["l_suppkey"] == dim["s_suppkey"], "inner")
-    want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
-    assert joined.count() == want.count()
-
-
-def test_reloaded_sketch_params_self_describing(spark, tmp_path):
-    """A reloaded sketch needs NO caller-remembered params: bloom_prune
-    reads num_bits off the sketch row itself, so the
-    persisted artifact cannot be probed with the wrong geometry."""
-    dim = spark.range(0, 500).withColumnRenamed("id", "s_suppkey")
-    fact = spark.range(0, 10_000).select(
-        (F.col("id") % 2_000).alias("l_suppkey"), F.col("id").alias("payload")
-    )
-    sketch = build_bloom(dim, num_bits=1 << 12)
-    path = str(tmp_path / "sketch_sd")
-    sketch.write.mode("overwrite").parquet(path)
-    reloaded = spark.read.parquet(path)
-    # no num_bits passed — derived from the sketch column
     pruned = bloom_prune(fact, reloaded)
     joined = pruned.join(dim, pruned["l_suppkey"] == dim["s_suppkey"], "inner")
     want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
     assert joined.count() == want.count()
 
 
-def test_mismatched_params_abort_not_false_negative(spark, tmp_path):
-    """Passing a num_bits that contradicts the sketch's own _NBITS
-    must ABORT eagerly on the driver, never silently drop matching
-    fact rows.  Driver validation (not a codegen raise_error row
-    guard) because the optimizer may reorder/split an AND chain and
-    evaluate — or short-circuit away — the guard conjunct after the
-    probe conjuncts already rejected the row (r10 advice)."""
-    dim = spark.range(0, 100).withColumnRenamed("id", "s_suppkey")
-    fact = spark.range(0, 1_000).select((F.col("id") % 200).alias("l_suppkey"))
-    sketch = build_bloom(dim, num_bits=1 << 12)
-    path = str(tmp_path / "sketch_mm")
-    sketch.write.mode("overwrite").parquet(path)
+def test_reloaded_sketch_params_self_describing(spark, tmp_path, monkeypatch):
+    """A reloaded sketch needs NO caller-remembered params: bloom_prune
+    reads the bit count off the sketch row itself, so a sketch written
+    under another ``NUM_BITS`` still probes with its own geometry."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.operators import bloom
+
+    dim = spark.range(0, 500).withColumnRenamed("id", "s_suppkey")
+    fact = spark.range(0, 10_000).select(
+        (F.col("id") % 2_000).alias("l_suppkey"), F.col("id").alias("payload")
+    )
+    path = str(tmp_path / "sketch_sd")
+    with monkeypatch.context() as m:
+        m.setattr(bloom, "NUM_BITS", 1 << 12)
+        build_bloom(dim).write.mode("overwrite").parquet(path)
     reloaded = spark.read.parquet(path)
-    with pytest.raises(ValueError, match="do not match the sketch"):
-        bloom_prune(fact, reloaded, num_bits=1 << 10)
+    assert len(reloaded.first()[0]) == (1 << 12) // 64
+    pruned = bloom_prune(fact, reloaded)
+    joined = pruned.join(dim, pruned["l_suppkey"] == dim["s_suppkey"], "inner")
+    want = fact.join(dim, fact["l_suppkey"] == dim["s_suppkey"], "inner")
+    assert joined.count() == want.count()

@@ -53,8 +53,7 @@ ENTRIES = [
     "doc_text_stats",
     "doc_token_counts",
     "doc_token_chunks",
-    "doc_lang_id",
-    "doc_fingerprint",
+    "doc_text_panel",
     "doc_profile",
     "doc_repetition_profile",
     "doc_decontaminated",

@@ -61,9 +61,6 @@ ENTRIES = [
     "doc_token_counts",
     "doc_token_chunks",
     "doc_chunk_dedup",
-    "doc_lang_id",
-    "doc_fingerprint",
-    "doc_quality_bands",
     "doc_profile",
     "doc_text_panel",
     "doc_repetition_profile",

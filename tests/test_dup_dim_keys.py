@@ -41,9 +41,6 @@ ENTRIES = [
     "master_table",
     "join_inner_chain",
     "join_variants_panel",
-    "join_left_outer_zero_orders",
-    "join_semi",
-    "join_anti",
     "salted_join_segments",
     "set_ops_panel",
     "dq_constraints_panel",
@@ -51,7 +48,6 @@ ENTRIES = [
     "dashboard_metrics_panel",
     "dashboard_top_nations",
     "sql_revenue_by_nation",
-    "stream_static_enrich",
     "stream_joins_panel",
     "flagship_category_distribution",
 ]

@@ -84,7 +84,7 @@ def test_split_and_samples_empty(empty_docs):
 def test_mixture_report_empty(empty_docs):
     # zero targeted rows → zero report rows (the rates frame groups an
     # empty relation), not a crash in the feasible-budget division
-    _expect_empty(lsmp.mixture_report(empty_docs, "n_chars"))
+    _expect_empty(lsmp.mixture_report(empty_docs))
 
 
 def test_connected_components_empty(spark):
@@ -258,7 +258,7 @@ def test_bloom_join_empty_fact(spark, smoke_dir):
     li = load_table(spark, smoke_dir, "lineitem").limit(0)
     sup = load_table(spark, smoke_dir, "supplier")
     _expect_empty(
-        bloom_pruned_join(li, sup, num_bits=1 << 10)
+        bloom_pruned_join(li, sup)
     )
 
 

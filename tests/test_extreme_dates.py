@@ -52,7 +52,6 @@ ENTRIES = [
     "na_drop",
     "dashboard_yearly_trend",
     "dashboard_day_of_week",
-    "dashboard_most_active_day",
     "window_trend_panel",
     "dashboard_pivot_priority",
     "dashboard_tiles",

@@ -42,8 +42,6 @@ ENTRIES = [
     "doc_chunk_dedup",
     "doc_text_stats",
     "doc_token_counts",
-    "doc_fingerprint",
-    "doc_quality_bands",
     "doc_tfidf_top_terms",
     "doc_exact_dedup",
     "doc_near_dup_banded",

@@ -10,7 +10,7 @@ parquet files read as ONE input partition, making Spark's
 accumulation order coincide with DuckDB's — an accident of scale,
 not a property.
 
-Contract (r9): the ``_finite_value`` entry gate gains a magnitude
+Contract (r9): the ``finite_value`` entry gate gains a magnitude
 arm — measures beyond ±``SANE_VALUE_MAX`` (1e9) are excluded like
 NaN/Inf (corrupt-sensor readings; fixture values are O(10³)).
 Within the bound, n·ulp summation error stays far below the 6 dp
@@ -37,13 +37,13 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import finite_value
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES, load_table
 
 ENTRIES = [
     "events_stats_profile",
     "events_value_mad",
-    "events_value_histogram",
     "events_time_decay_profile",
     "events_ohlc_bars",
     "events_anomaly_profile",
@@ -116,9 +116,7 @@ def test_gated_sum_is_partition_layout_invariant(spark, spikes_dir):
     layouts even with spikes present in the raw data."""
     from pyspark.sql import functions as F
 
-    ev = load_table(spark, spikes_dir, "events").filter(
-        entrymod._finite_value()
-    )
+    ev = load_table(spark, spikes_dir, "events").filter(finite_value())
     outs = []
     for n in (1, 3, 17):
         rows = (

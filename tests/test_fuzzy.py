@@ -1,5 +1,7 @@
 """Blocked sorted-neighborhood fuzzy matching: window reach, distance
-threshold, blocking boundary semantics, determinism.
+threshold, blocking boundary semantics, determinism.  The block is the
+14-char ``c_name`` prefix, so the fixtures share ``P`` (TPC-H's
+``Customer#00000`` prefix) wherever names must meet in one block.
 """
 
 import pytest
@@ -8,15 +10,17 @@ from pyspark.sql import functions as F
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.operators.fuzzy import fuzzy_pairs_sorted_neighborhood
 
+P = "Customer#00000"
+
 
 @pytest.fixture(scope="module")
 def names(spark):
     return spark.createDataFrame(
         [
-            (1, "alpha"),
-            (2, "alphb"),   # distance 1 from alpha, adjacent in sort
-            (3, "alphz"),   # distance 1 from both, within the window
-            (4, "zebra"),   # far away in sort order and distance
+            (1, P + "alpha"),
+            (2, P + "alphb"),   # distance 1 from alpha, adjacent in sort
+            (3, P + "alphz"),   # distance 1 from both, within the window
+            (4, P + "zebra"),   # far away in sort order and distance
         ],
         "c_custkey long, c_name string",
     )
@@ -32,7 +36,7 @@ def test_window_pairs_within_threshold(names):
 
 def test_window_misses_distant_sort_neighbors(spark):
     df = spark.createDataFrame(
-        [(1, "alpha"), (2, "alphb"), (3, "alphc"), (4, "alphd"), (5, "alphz")],
+        [(i, P + s) for i, s in enumerate(["alpha", "alphb", "alphc", "alphd", "alphz"], 1)],
         "c_custkey long, c_name string",
     )
     got = {
@@ -46,33 +50,35 @@ def test_window_misses_distant_sort_neighbors(spark):
 
 
 def test_blocking_cuts_cross_block_pairs(spark):
+    other = P[:-1] + "1"  # differs from P in the 14th character
     df = spark.createDataFrame(
-        [(1, "aa1"), (2, "aa2"), (3, "ba2")],
+        [(1, P + "aa1"), (2, P + "aa2"), (3, other + "aa2")],
         "c_custkey long, c_name string",
     )
-    unblocked = {
+    got = {
         (r.id_a, r.id_b)
         for r in fuzzy_pairs_sorted_neighborhood(df).collect()
     }
-    blocked = {
-        (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(
-            df, block_col=F.substring("c_name", 1, 1),
-        ).collect()
-    }
-    assert (1, 2) in unblocked and (1, 2) in blocked
-    # aa2~ba2 is distance 1 but crosses the first-char block boundary
-    assert (2, 3) in unblocked and (2, 3) not in blocked
+    assert (1, 2) in got
+    # 2 and 3 are distance 1 apart but cross the prefix block boundary
+    assert (2, 3) not in got
 
 
 def test_multi_pass_reversed_key_recovers_prefix_typos(spark):
-    """The documented recall upgrade: a PREFIX typo ('xmith'~'smith')
-    lands far away in forward sort order, but a second pass sorted on
-    the REVERSED string puts the shared suffix adjacent; the union of
-    passes recovers the pair."""
+    """The documented recall upgrade: a typo at the start of the
+    distinguishing part ('xmith'~'smith') lands far away in forward
+    sort order, but a second pass on the REVERSED name puts the shared
+    suffix adjacent; the union of passes recovers the pair.  Every
+    name ends in the same 14 characters, so the reversed pass blocks
+    them together too."""
+    suffix = "0000000000#rcs"
     df = spark.createDataFrame(
-        [(1, "smith"), (2, "xmith"), (3, "tiger"), (4, "zzzzz"),
-         (5, "umbra"), (6, "vapor"), (7, "wheat")],
+        [
+            (i, P + s + suffix)
+            for i, s in enumerate(
+                ["smith", "xmith", "tiger", "zzzzz", "umbra", "vapor", "wheat"], 1
+            )
+        ],
         "c_custkey long, c_name string",
     )
     fwd = {
@@ -85,27 +91,3 @@ def test_multi_pass_reversed_key_recovers_prefix_typos(spark):
     ).select("id_a", "id_b", "distance")
     both = fwd | {(r.id_a, r.id_b) for r in rev.collect()}
     assert (1, 2) in both
-
-
-def test_block_col_may_name_another_column(spark):
-    """Regression: block_col="zip" (a column OTHER than id/key) must
-    resolve — the narrowing projection used to drop it before the
-    block expression was bound."""
-    from yelp_review_data_analysis_using_big_data_technologies_spark.operators.fuzzy import (
-        fuzzy_pairs_sorted_neighborhood,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "smith", "111"),
-            (2, "smyth", "111"),
-            (3, "smith", "999"),
-        ],
-        "c_custkey long, c_name string, zip string",
-    )
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in fuzzy_pairs_sorted_neighborhood(df, block_col="zip").collect()
-    }
-    # 1-2 share a block and are 1 edit apart; 3 is blocked away
-    assert pairs == {(1, 2)}

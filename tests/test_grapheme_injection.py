@@ -74,9 +74,7 @@ ENTRIES = [
     "doc_text_stats",
     "doc_token_counts",
     "doc_token_chunks",
-    "doc_lang_id",
-    "doc_fingerprint",
-    "doc_quality_bands",
+    "doc_text_panel",
     "doc_profile",
     "doc_repetition_profile",
     "doc_tfidf_top_terms",

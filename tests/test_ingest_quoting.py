@@ -48,9 +48,6 @@ EDGES = [
 ]
 
 ENTRIES = [
-    "csv_ingest_roundtrip",
-    "json_ingest_roundtrip",
-    "orc_ingest_roundtrip",
     "ingest_roundtrip_panel",
 ]
 

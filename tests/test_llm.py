@@ -78,12 +78,8 @@ class TestNearDupBanded:
 
     def test_signature_entries_are_independent(self, docs):
         sig = (
-            docs.filter("doc_id = 1")
-            .select(
-                ltx.minhash_signature_from(
-                    ltx.shingles_from_tokens(ltx.tokens("text"), 3)
-                ).alias("g")
-            )
+            ltx.shingled(docs.filter("doc_id = 1"), [])
+            .select(ltx.minhash_signature_from().alias("g"))
             .collect()[0]
             .g
         )

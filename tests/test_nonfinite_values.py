@@ -7,7 +7,7 @@ huge ratio overflowed the int cast), DuckDB's ``stddev_samp`` raised
 ``Out of Range`` on Inf where Spark returned NaN, and the MAD
 diverged (Spark's median skips NaN, DuckDB's propagates it).  The
 moment/order-statistic/histogram entries now share a finite-only
-entry filter (``_finite_value`` / ``_FINITE_VALUE_SQL``) that keeps
+entry filter (``functions.columns.finite_value`` / ``FINITE_VALUE_SQL``) that keeps
 NULL rows — a no-op on every clean and NULL-injected fixture — and
 this suite replays them over a fixture with NaN/+Inf/-Inf
 hash-injected into ``events.value``.
@@ -43,7 +43,6 @@ ENTRIES = [
     "corpus_semantic_dedup",
     "events_stats_profile",
     "events_value_mad",
-    "events_value_histogram",
     "events_analytics_panel",
     "dashboard_tiles",
     "cdc_latest_state",

@@ -156,9 +156,7 @@ ENTRIES = [
     "events_transition_matrix",
     "events_cohort_retention",
     "events_funnel_steps",
-    "events_value_histogram",
     "events_hourly_gapfill",
-    "dashboard_most_active_day",
     "dashboard_tiles",
     # fourth wave: sessionization/range joins under NULL ts/user_id,
     # format round-trips under NULL payloads (JSON/CSV null fidelity),
@@ -170,12 +168,8 @@ ENTRIES = [
     "ingest_roundtrip_panel",
     "master_table_partitioned_roundtrip",
     "stream_windows_panel",
-    "doc_lang_id",
     "doc_token_chunks",
     "doc_token_counts",
-    "doc_fingerprint",
-    "doc_quality_bands",
-    "doc_shingle_top10",
     # fifth wave: NULL embedding vectors through the vector family and
     # NULL props through JSON extraction
     "vec_cosine_near_dup_pinned",
@@ -217,7 +211,6 @@ ENTRIES = [
     "vec_ivf_index_search",
     "doc_near_dup_removal",
     "dashboard_yearly_trend",
-    "dashboard_price_quantiles",
     "sql_priority_share",
     "filter_pushdown",
     # ninth wave (r9): the round's new operators — winnowing under

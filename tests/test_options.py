@@ -9,12 +9,14 @@ only a test passes is a knob kept for the test, so a test reaches the
 behaviour through its fixture instead.
 
 Each call contributes the value it passes, keyed so that a literal
-and a module constant assigned that literal count as one value.  An
-omitted argument counts as the parameter's default; a function with
-no visible call therefore uses its defaults alone.  A ``*args`` /
-``**kwargs`` spread, an expression that is not a literal or module
-constant, and any call whose target the scan cannot name count as
-"unknown", which is never one value.  A call passes a parameter
+and a module constant assigned that literal count as one value; any
+other expression whose names are all module-level (imports and module
+constants, e.g. ``F.substring("c_name", 1, 14)`` or ``1 << 16``) is
+keyed by its text, as defaults are.  An omitted argument counts as the
+parameter's default; a function with no visible call therefore uses
+its defaults alone.  A ``*args`` / ``**kwargs`` spread, an expression
+that reads a local name, and any call whose target the scan cannot
+name count as "unknown", which is never one value.  A call passes a parameter
 through a keyword, a positional, a spread or a ``functools.partial``.
 Call targets are matched by name (import aliases resolved, without
 scoping), so a call to one public function counts for every package
@@ -83,6 +85,21 @@ ALLOWED = {
         "Lloyd fit depends on its training sample, so no "
         "seeded rebuild over a different corpus reproduces them"
     ),
+    **{
+        f"{PKG}/{twin}.pairs_sql": (
+            "the twin's input edge relation, the SQL side of the "
+            "operator's DataFrame argument: the entries feed it the "
+            f"banded near-dup pairs, and {test} runs it over literal "
+            "chain, star, cycle and clique edge lists that no documents "
+            "fixture produces through the banded LSH"
+        )
+        for twin, test in (
+            ("llm/clusters.py::connected_components_sql", "tests/test_graph_topologies.py"),
+            ("llm/clusters.py::label_propagation_sql", "tests/test_graph_topologies.py"),
+            ("operators/graph.py::pagerank_sql", "tests/test_graph_topologies.py"),
+            ("operators/graph.py::triangle_counts_sql", "tests/test_triangles.py"),
+        )
+    },
     # ``path path::func.param``: a file whose calls may pass that
     # parameter its default
     f"perfbench/run.py {PKG}/llm/staging.py::release_staging.blocking": (
@@ -110,10 +127,13 @@ def _literal(node):
 
 
 def _constants(trees):
-    """Key function for the values calls pass: a literal, or a module
-    constant (an upper-case name some file assigns at module level),
-    maps to one key — a constant whose every assignment is the same
-    literal shares that literal's key; anything else maps to ``None``."""
+    """Key function ``key(node, imports)`` for the values calls pass: a
+    literal, or a module constant (an upper-case name some file assigns
+    at module level), maps to one key — a constant whose every
+    assignment is the same literal shares that literal's key; another
+    expression whose every name is in ``imports`` (the calling file's
+    imported names) or a module constant maps to its ``ast.dump``;
+    anything else maps to ``None``."""
     assigned = {}
     for tree in trees:
         for node in tree.body:
@@ -123,7 +143,7 @@ def _constants(trees):
                     lit = _literal(node.value) if node.value is not None else None
                     assigned.setdefault(t.id, set()).add(repr(lit) if lit else t.id)
 
-    def key(node):
+    def key(node, imports=frozenset()):
         if node is None:
             return None
         lit = _literal(node)
@@ -133,6 +153,9 @@ def _constants(trees):
         if name in assigned:
             values = assigned[name]
             return next(iter(values)) if len(values) == 1 else name
+        names = {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+        if names <= set(imports) | set(assigned):
+            return ast.dump(node)
         return None
 
     return key
@@ -211,7 +234,10 @@ class _File:
         package = path[:-3].split(os.sep)[:-1]
         self.aliases, self.external, self.partials = {}, set(), set()
         self.origin = {}  # local name → dotted module it was imported from
+        self.imports = set()  # every name an import binds
         for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                self.imports.update((a.asname or a.name).split(".")[0] for a in node.names)
             if isinstance(node, ast.ImportFrom):
                 for a in node.names:
                     local = a.asname or a.name
@@ -378,7 +404,12 @@ def _scan(files):
                     unknown.append(f"{path}:{node.lineno} {c.name_of(func)}({len(args)} positionals)")
                 for f in target:
                     if c.reaches(path, func, f):
-                        f.call(args, node.keywords, key, f"{path}:{node.lineno}")
+                        f.call(
+                            args,
+                            node.keywords,
+                            lambda v, imports=c.imports: key(v, imports),
+                            f"{path}:{node.lineno}",
+                        )
                     forward(f.node, node.keywords)
             elif kind == "local" and not isinstance(target, ast.ClassDef):
                 forward(target, node.keywords)
@@ -472,7 +503,7 @@ def test_scan_flags_a_parameter_no_call_sets():
         "tests/test_m.py": f"from {PKG}.m import f\nf(0, unset=4, same='y')\n",
     }
     m = f"{PKG}/m.py::"
-    assert _single(planted) == [m + "f.same", m + "f.unset", m + "g.by"]
+    assert _single(planted) == [m + "f.same", m + "f.unset", m + "g.by", m + "run.fn"]
 
 
 def test_scan_flags_a_required_parameter_every_call_fixes():
@@ -513,6 +544,30 @@ def test_scan_counts_values_not_setters():
     }
     m = f"{PKG}/m.py::"
     assert _single(planted) == [m + "f.by", m + "f.threshold", m + "pub.col"]
+
+
+def test_scan_keys_module_level_expressions():
+    planted = {
+        f"{PKG}/m.py": (
+            "from pyspark.sql import functions as F\n"
+            "N = 4\n"
+            "def blk(df, col=None):\n    return df\n"
+            "def bits(df, n=1 << 23):\n    return df\n"
+            "def loc(df, col):\n    return df\n"
+            "def run(df, c):\n"
+            "    blk(df, col=F.substring('c_name', 1, 14))\n"
+            "    bits(df, n=1 << N)\n"
+            "    loc(df, F.col(c))\n    return loc(df, F.col(c))\n"
+        ),
+        "scripts/m_cli.py": (
+            f"from pyspark.sql import functions as F\nfrom {PKG}.m import blk, bits\n"
+            "blk(0, F.substring('c_name', 1, 14))\nbits(0, 1 << 16)\n"
+        ),
+    }
+    m = f"{PKG}/m.py::"
+    # one expression twice is one value; ``1 << N`` and ``1 << 16`` are
+    # two; ``F.col(c)`` reads a local, so it stays unknown
+    assert _single(planted) == [m + "blk.col"]
 
 
 def test_every_parameter_has_two_values_in_use():

@@ -525,16 +525,15 @@ class TestMixtureSample:
     def langs(self, spark):
         # Lopsided over the MIXTURE_WEIGHTS languages: en binds (its
         # 0.4 target is the scarcest), de must downsample to 1/4 and
-        # es/fr/zh to 3/4; the untargeted 'xx' drops.
+        # es/fr/zh to 3/4; the untargeted 'xx' drops.  Every doc holds
+        # 40 whitespace tokens.
         sizes = {"en": 200, "de": 300, "es": 100, "fr": 100, "zh": 100, "xx": 50}
         rows = [
-            (1000 * k + i, lang, 40)
+            (1000 * k + i, lang, " ".join(["tok"] * 40))
             for k, (lang, n) in enumerate(sizes.items())
             for i in range(n)
         ]
-        return spark.createDataFrame(
-            rows, "doc_id long, lang string, n_tokens long"
-        )
+        return spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
     W = {"a": 1 / 3, "b": 1 / 3, "c": 1 / 3}
 
@@ -565,7 +564,7 @@ class TestMixtureSample:
         assert set(range(1000, 1100)) <= set(s1)  # binding domain intact
 
     def test_achieved_shares_near_targets(self, langs):
-        rep = {r.domain: r for r in lsmp.mixture_report(langs, "n_tokens").collect()}
+        rep = {r.domain: r for r in lsmp.mixture_report(langs).collect()}
         assert set(rep) == set(lsmp.MIXTURE_WEIGHTS)
         for lang, r in rep.items():
             # per-doc hash granularity: shares land within a few
@@ -580,9 +579,8 @@ class TestMixtureSample:
         pdf = langs.toPandas()  # noqa: F841  (registered by name below)
         con = duckdb.connect()
         con.register("documents", pdf)
-        sql = lsmp.mixture_report_sql("n_tokens")
-        oracle = [tuple(r) for r in con.execute(sql).fetchall()]
-        got = [tuple(r) for r in lsmp.mixture_report(langs, "n_tokens").collect()]
+        oracle = [tuple(r) for r in con.execute(lsmp.mixture_report_sql()).fetchall()]
+        got = [tuple(r) for r in lsmp.mixture_report(langs).collect()]
         assert [tuple(map(str, t)) for t in got] == [
             tuple(map(str, t)) for t in oracle
         ]

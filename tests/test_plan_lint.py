@@ -28,9 +28,7 @@ import __spark_entry__ as entrymod
 #: plan shape is covered by tests/test_streaming.py instead.
 _STREAMING = {
     "stream_tumbling_counts",
-    "stream_sliding_counts",
     "stateful_running_profile",
-    "stream_stream_join",
     # executes a full 3-micro-batch availableNow run on construction;
     # its returned frame is a plain parquet read — the streaming
     # pipeline itself is vetted in tests/test_streaming.py
@@ -46,7 +44,6 @@ _STREAMING = {
 #: BroadcastNestedLoopJoin is acceptable ONLY for bounded broadcast
 #: fan-outs, where the build side is a handful of rows by construction:
 _BNLJ_OK = {
-    "dashboard_totals",  # 1-row × 1-row aggregate tiles
     "dashboard_tiles",  # crossJoin of three 1-row tile aggregates
     "vec_top_k_bruteforce",  # broadcast query set × corpus (by design)
     "vec_top_k_ann_ivf",  # broadcast centroid set (n_cells rows)

@@ -6,7 +6,7 @@ the cases hand-written examples miss (weird concatenations, boundary
 weights, bucket-edge ids).
 """
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from yelp_review_data_analysis_using_big_data_technologies_spark.functions.casemap import (
     SUPER_CATEGORIES,
@@ -131,11 +131,14 @@ class TestMixtureParityProperty:
     RANDOM weights and token distributions — the adversarial surface
     is the float path (non-representable weights like 0.1, rates a
     hair under 1.0, the floor/clamp at the hex-threshold edge), which
-    must produce bit-identical doubles in Spark and DuckDB."""
+    must produce bit-identical doubles in Spark and DuckDB.  The
+    domain column's name is drawn too: a column named ``domain`` must
+    not clash with the twin's threshold relation."""
 
     @settings(max_examples=6, deadline=None)
+    @example(wt=([0.5, 0.25], [3, 5]), col="domain")
     @given(
-        st.integers(min_value=2, max_value=4).flatmap(
+        wt=st.integers(min_value=2, max_value=4).flatmap(
             lambda n: st.tuples(
                 st.lists(
                     st.floats(
@@ -153,9 +156,10 @@ class TestMixtureParityProperty:
                     max_size=n,
                 ),
             )
-        )
+        ),
+        col=st.sampled_from(["src", "domain"]),
     )
-    def test_report_matches_duckdb_twin(self, spark, wt):
+    def test_report_matches_duckdb_twin(self, spark, wt, col):
         import duckdb
 
         weights_raw, sizes = wt
@@ -165,29 +169,30 @@ class TestMixtureParityProperty:
         rows, nid = [], 0
         for i, dom in enumerate(domains):
             for _ in range(sizes[i]):
-                rows.append((nid, dom, langs[nid % len(langs)], 1 + (nid * 7919) % 97))
+                n = 1 + (nid * 7919) % 97
+                rows.append((nid, dom, langs[nid % len(langs)], n, " ".join(["t"] * n)))
                 nid += 1
         df = spark.createDataFrame(
-            rows, "doc_id long, src string, lang string, n_tokens long"
+            rows, f"doc_id long, {col} string, lang string, n_tokens long, text string"
         )
         con = duckdb.connect()
         con.register("documents", df.toPandas())
         # the random weights reach the membership draw ...
         got = sorted(
-            r.doc_id for r in lsmp.mixture_sample(df, weights, domain_col="src").collect()
+            r.doc_id for r in lsmp.mixture_sample(df, weights, domain_col=col).collect()
         )
         oracle = sorted(
             r[0]
             for r in con.execute(
-                lsmp.mixture_sample_sql(weights, domain_expr="src", cols="doc_id")
+                lsmp.mixture_sample_sql(weights, domain_expr=col, cols="doc_id")
             ).fetchall()
         )
         assert got == oracle
         # ... and the random token totals the report at MIXTURE_WEIGHTS
-        got = [tuple(map(str, r)) for r in lsmp.mixture_report(df, "n_tokens").collect()]
+        got = [tuple(map(str, r)) for r in lsmp.mixture_report(df).collect()]
         oracle = [
             tuple(map(str, r))
-            for r in con.execute(lsmp.mixture_report_sql("n_tokens")).fetchall()
+            for r in con.execute(lsmp.mixture_report_sql()).fetchall()
         ]
         assert got == oracle
 

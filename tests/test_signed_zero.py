@@ -39,7 +39,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers
 ENTRIES = [
     "events_stats_profile",
     "events_value_mad",
-    "events_value_histogram",
     "events_time_decay_profile",
     "events_ohlc_bars",
     "events_anomaly_profile",

@@ -199,7 +199,7 @@ BOUNDARY_DOCS = [
 ENTRIES = [
     "doc_gopher_rules",
     "doc_c4_clean",
-    "doc_quality_bands",
+    "doc_profile",
     "doc_lm_quality",
     "doc_line_dedup",
     "doc_text_stats",

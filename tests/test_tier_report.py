@@ -2,7 +2,7 @@
 manifest only from a durations log that covers every test the current
 manifest lists.  Each case runs the script in a temp cwd holding its
 own copy of tests/slow_manifest.txt, so the real manifest is never
-touched."""
+touched.  The manifest itself must name only tests that still exist."""
 
 import os
 import shutil
@@ -49,3 +49,22 @@ def test_full_log_regenerates_the_committed_manifest(tmp_path):
     assert out.returncode == 0, out.stderr
     rebuilt = _node_ids(tmp_path / "tests" / "slow_manifest.txt")
     assert rebuilt == _node_ids(MANIFEST)
+
+
+def test_manifest_lists_only_collected_tests():
+    """A manifest id no test carries any more is drift: the test was
+    deleted or renamed, and a renamed slow test silently joined the
+    budgeted tier under its new id.  Collect everything (both tiers,
+    no Spark) and check every listed id is still there."""
+    out = subprocess.run(
+        [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q",
+         "-m", "slow or not slow", "-p", "no:cacheprovider"],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+    collected = {ln.strip() for ln in out.stdout.splitlines() if "::" in ln}
+    stale = [i for i in _node_ids(MANIFEST) if i not in collected]
+    assert stale == [], (
+        "tests/slow_manifest.txt lists ids no test carries (drop them, "
+        "or list the renamed id):\n  " + "\n  ".join(stale)
+    )

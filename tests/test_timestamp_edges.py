@@ -41,7 +41,6 @@ ENTRIES = [
     "stream_windows_panel",
     "stream_joins_panel",
     "stream_incremental_matview",
-    "stream_static_enrich",
     "events_sessionize",
     "events_range_join_sessions",
     "events_asof_join",

@@ -38,6 +38,10 @@ from pyspark.sql import functions as F
 
 from .text import shingled
 
+#: Deterministic benchmark carve-out of ``documents``: every 20th doc
+#: plays the eval set; the rest is the corpus.
+BENCH_PRED = "doc_id % 20 = 0"
+CORPUS_PRED = "doc_id % 20 <> 0"
 
 def contamination_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """(doc_id, n_shared) for corpus docs sharing ≥ 2
@@ -96,14 +100,15 @@ def _shingle_cte(table_expr: str, id_sel: str) -> str:
     )
 
 
-def contamination_overlap_sql(corpus_expr: str, bench_expr: str) -> str:
-    """DuckDB twin of :func:`contamination_overlap` over arbitrary
-    table EXPRESSIONS (a table name, a parenthesized subquery, or a
-    CTE name) — the reusable form compositions nest (the
-    training-freeze pipeline decontaminates the post-dedup relation
-    against the raw benchmark carve-out, two different tables)."""
+def contamination_overlap_sql(corpus_expr: str) -> str:
+    """DuckDB twin of :func:`contamination_overlap` of a corpus table
+    EXPRESSION (a table name, a parenthesized subquery, or a CTE name)
+    against the ``BENCH_PRED`` carve-out of ``documents`` — the
+    reusable form compositions nest (the training-freeze pipeline
+    decontaminates the post-dedup relation against the raw
+    benchmark carve-out)."""
     corpus_sh = _shingle_cte(corpus_expr, "doc_id,")
-    bench_sh = _shingle_cte(bench_expr, "")
+    bench_sh = _shingle_cte(f"(SELECT * FROM documents WHERE {BENCH_PRED})", "")
     return f"""
 WITH corpus_sh AS ({corpus_sh}),
 bench_sh AS (SELECT DISTINCT s FROM ({bench_sh}))

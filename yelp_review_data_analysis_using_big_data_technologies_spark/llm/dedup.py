@@ -86,14 +86,15 @@ def exact_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def band_key_array(sig_col):
-    """The ``BANDS`` LSH bucket keys derived from a ``NUM_HASHES``-wide
-    MinHash signature array column, as one array expression — THE shared definition of
+def band_key_array():
+    """The ``BANDS`` LSH bucket keys derived from the ``NUM_HASHES``-wide
+    MinHash signature array column ``__sig``, as one array expression — THE shared definition of
     how a signature becomes band keys (the self-join staging, the
     delta-vs-corpus join, and the streaming ingest's persisted index
     all call this; a band-layout change cannot silently diverge
     them)."""
     rows = NUM_HASHES // BANDS
+    sig_col = F.col("__sig")
     return F.array(
         *[
             F.concat_ws(
@@ -140,13 +141,13 @@ def _banded_keys(df: DataFrame) -> tuple[DataFrame, DataFrame]:
             F.array_distinct(F.col("__sh0")).alias("__sh"),
         )
         .filter(F.size("__sh") > 0)
-        .withColumn("__sig", minhash_signature_from(F.col("__sh")))
+        .withColumn("__sig", minhash_signature_from())
         .withColumn("__sz", F.size("__sh"))
     )
     band_keys = base.select(
         "__id",
         F.explode(
-            band_key_array(F.col("__sig"))
+            band_key_array()
         ).alias("band_key"),
     )
     return base, band_keys

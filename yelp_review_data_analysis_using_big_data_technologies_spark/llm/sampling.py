@@ -38,6 +38,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.llm import text as ltx
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.vectors import IVF_CELLS
 
 #: Per-language sampling fractions of :func:`stratified_sample` and its
@@ -452,13 +453,15 @@ def mixture_sample(
     )
 
 
-def mixture_report(df: DataFrame, tokens: Column | str) -> DataFrame:
+def mixture_report(df: DataFrame) -> DataFrame:
     """Accounting panel for :func:`mixture_sample` over ``lang`` at the
-    ``MIXTURE_WEIGHTS`` targets: per domain the corpus totals, target weight, keep rate, kept docs/tokens, and
-    the ACHIEVED token share — the number that should land on the
-    target weight (up to per-document sampling granularity)."""
-    tok = (F.col(tokens) if isinstance(tokens, str) else tokens).cast("bigint")
-    rates = mixture_rates(df, MIXTURE_WEIGHTS, domain_col="lang", tokens=tokens)
+    ``MIXTURE_WEIGHTS`` targets, weighed in whitespace tokens of
+    ``text``: per domain the corpus totals, target weight, keep rate,
+    kept docs/tokens, and the ACHIEVED token share — the number that
+    should land on the target weight (up to per-document sampling
+    granularity)."""
+    tok = ltx.token_count().cast("bigint")
+    rates = mixture_rates(df, MIXTURE_WEIGHTS, domain_col="lang", tokens=ltx.token_count())
     d = df.filter(F.col("lang").isin(list(MIXTURE_WEIGHTS))).select(
         F.col("lang").alias("domain"),
         F.col("doc_id").alias("__id"),
@@ -546,28 +549,31 @@ def mixture_sample_sql(
     """DuckDB twin of :func:`mixture_sample` — the kept ROWS, not the
     accounting panel: ``table`` rows of targeted domains whose salted
     hash bucket falls under the in-engine per-domain threshold.
-    ``domain_expr`` and ``doc_id`` must be plain columns of ``table``
-    here (they qualify the outer join/filter as well as the CTE
-    chain)."""
+    ``table`` must be a relation name, and ``domain_expr`` and
+    ``doc_id`` plain columns of it (they qualify the outer join/filter
+    as well as the CTE chain; the join qualifies ``domain_expr`` with
+    ``table``, so a column named ``domain`` does not clash with the
+    threshold relation's)."""
     b = hash_bucket_sql("doc_id", MIXTURE_SALT)
     return f"""
 SELECT {cols}
 FROM {table}
 JOIN (WITH {_mixture_threshold_ctes(weights, table, domain_expr, "n_tokens")}
       SELECT domain, __thr FROM __h) __mx
-  ON {domain_expr} = __mx.domain
+  ON {table}.{domain_expr} = __mx.domain
 WHERE {b} < __mx.__thr
 """
 
 
-def mixture_report_sql(tokens_expr: str) -> str:
+def mixture_report_sql() -> str:
     """DuckDB twin of :func:`mixture_report` over ``documents`` — same salt, same
     in-engine rate derivation (weights rendered via :func:`_fmt_double`
     so both engines hold the identical doubles), same hex-threshold
-    clamp."""
+    clamp, same whitespace token count."""
     b = hash_bucket_sql("d.__id", MIXTURE_SALT)
+    ntok = "len(regexp_split_to_array(text, '[ \\t\\n\\x0B\\f\\r]+'))"
     return f"""
-WITH {_mixture_threshold_ctes(MIXTURE_WEIGHTS, "documents", "lang", tokens_expr)}, __k AS (
+WITH {_mixture_threshold_ctes(MIXTURE_WEIGHTS, "documents", "lang", ntok)}, __k AS (
   SELECT d.domain, COUNT(*) AS kept_docs,
          CAST(SUM(d.__tok) AS BIGINT) AS kept_tokens
   FROM __d d JOIN __h h USING (domain)

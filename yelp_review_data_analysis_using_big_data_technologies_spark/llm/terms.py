@@ -413,10 +413,11 @@ _HEX = "0123456789abcdef"
 DSIR_BUCKETS = 1024
 
 
-def _bucket(col: Column) -> Column:
-    """md5-prefix hash bucket, portable to the SQL twin (same
-    instr-arithmetic idiom as llm/dedup.py::_hex4_to_int)."""
-    h = F.md5(col)
+def _feature_bucket() -> Column:
+    """md5-prefix hash bucket of the feature column ``f``, portable to
+    the SQL twin (same instr-arithmetic idiom as
+    llm/dedup.py::_hex4_to_int)."""
+    h = F.md5("f")
     out = F.lit(0)
     for pos, weight in ((1, 4096), (2, 256), (3, 16), (4, 1)):
         out = out + (F.instr(F.lit(_HEX), F.substring(h, pos, 1)) - 1) * F.lit(
@@ -439,7 +440,7 @@ def _feature_stream(df: DataFrame) -> DataFrame:
                 )
             ).alias("f"),
         )
-        .select("doc_id", _bucket(F.col("f")).alias("b"))
+        .select("doc_id", _feature_bucket().alias("b"))
     )
 
 

@@ -203,9 +203,9 @@ def shingled(
 NUM_HASHES = 6
 
 
-def minhash_signature_from(shingle_col: Column) -> Column:
-    """``NUM_HASHES``-wide signature from an ALREADY-BUILT shingle
-    array column.
+def minhash_signature_from() -> Column:
+    """``NUM_HASHES``-wide signature from the ALREADY-BUILT shingle
+    array column ``__sh`` (as :func:`shingled` names it).
 
     Use this when the shingle array is materialized in the plan (e.g.
     the LSH join builds it once and reuses it) — deriving the signature
@@ -214,6 +214,8 @@ def minhash_signature_from(shingle_col: Column) -> Column:
     change a min, so distinct or raw shingle arrays give the same
     signature.
     """
+
+    shingle_col = F.col("__sh")
 
     def salted_min(i: int) -> Column:
         # NOTE: the lambda must take exactly one parameter — pyspark

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import FINITE_EVENTS_SQL
+
 #: Buckets of :func:`equidepth_histogram` and its twin (edges at the
 #: quartiles).
 HIST_BUCKETS = 4
@@ -75,13 +77,14 @@ def iqr_outlier_profile(events: DataFrame) -> DataFrame:
     )
 
 
-def iqr_outlier_profile_sql(table: str = "events") -> str:
+def iqr_outlier_profile_sql() -> str:
     """DuckDB twin of :func:`iqr_outlier_profile` — ``quantile_cont``
     matches Spark's interpolated ``percentile`` exactly; fences
-    compared unrounded."""
+    compared unrounded.  Reads the finite events
+    (``FINITE_EVENTS_SQL``)."""
     return f"""
 WITH ev AS (
-  SELECT event_type, value AS __v FROM {table}
+  SELECT event_type, value AS __v FROM {FINITE_EVENTS_SQL}
   WHERE value IS NOT NULL AND isfinite(value)
 ), stats AS (
   SELECT event_type, count(*) AS n,

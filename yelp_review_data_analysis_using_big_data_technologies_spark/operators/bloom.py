@@ -19,10 +19,10 @@ The build is fully distributed — no key list ever reaches the driver:
    with the power-of-two ``m``, so the stride never degenerates);
 2. positions fold into 64-bit words with a ``bit_or`` partial aggregate
    (map-side combine; the shuffle carries at most
-   ``min(NUM_HASHES·|dim|, num_bits)`` distinct positions);
+   ``min(NUM_HASHES·|dim|, NUM_BITS)`` distinct positions);
 3. the sketch is ONE row — a DENSE ``array<bigint>`` of exactly
-   ``num_bits/64`` words (1 MiB at the default 2^23 bits) —
-   broadcast onto the fact scan as a bounded 1-row relation.
+   ``NUM_BITS/64`` words (8 KiB at 2^16 bits) — broadcast onto the
+   fact scan as a bounded 1-row relation.
 
 The dense array is load-bearing, not cosmetic: Spark's ``element_at``
 on a MAP column is a LINEAR SCAN of the entries (ArrayBasedMapData has
@@ -41,8 +41,7 @@ probe side would drop null-extended rows.
 Sizing: for ``n`` keys and false-positive rate ``p``, the textbook
 ``m = -n·ln p / (ln 2)²`` and ``h = (m/n)·ln 2``, with ``m`` rounded
 up to a power of two so the double-hash stride (odd step) stays
-coprime with it; the default 2^23 bits / 5 hashes holds ~1M keys at
-p ≈ 1%.
+coprime with it; 2^16 bits / 5 hashes holds ~6.8k keys at p ≈ 1%.
 """
 
 from __future__ import annotations
@@ -55,7 +54,8 @@ _WORDS = "__bf_words"
 _NBITS = "__bf_num_bits"
 _SKETCH_COLS = (_WORDS, _NBITS)
 
-DEFAULT_NUM_BITS = 1 << 23
+#: sketch size in bits (a power of two >= 64)
+NUM_BITS = 1 << 16
 NUM_HASHES = 5
 
 
@@ -78,9 +78,9 @@ def _positions(key: Column, num_bits: int) -> list[Column]:
     ]
 
 
-def build_bloom(dim: DataFrame, *, num_bits: int = DEFAULT_NUM_BITS) -> DataFrame:
+def build_bloom(dim: DataFrame) -> DataFrame:
     """One-row sketch relation ``(words array<bigint> of exactly
-    num_bits/64 words, num_bits)`` over ``dim["s_suppkey"]``.
+    NUM_BITS/64 words, NUM_BITS)`` over ``dim["s_suppkey"]``.
 
     NULL keys are skipped — NULL never equi-matches, so setting bits
     for them would only add false positives.  The sketch is a plain
@@ -88,11 +88,9 @@ def build_bloom(dim: DataFrame, *, num_bits: int = DEFAULT_NUM_BITS) -> DataFram
     reusable across any number of fact scans, which is the capability
     Spark's injected runtime filter does not expose.
     """
-    if not (num_bits >= 64 and (num_bits & (num_bits - 1)) == 0):
-        raise ValueError(f"num_bits must be a power of two >= 64: {num_bits}")
     k = F.col("s_suppkey")
-    num_words = num_bits // 64
-    pos = F.explode(F.array(*_positions(k, num_bits))).alias("__pos")
+    num_words = NUM_BITS // 64
+    pos = F.explode(F.array(*_positions(k, NUM_BITS))).alias("__pos")
     words = (
         dim.where(k.isNotNull())
         .select(pos)
@@ -106,7 +104,7 @@ def build_bloom(dim: DataFrame, *, num_bits: int = DEFAULT_NUM_BITS) -> DataFram
         .agg(F.bit_or("__word_bit").alias("__word"))
     )
     # dense zero-fill: range(W) LEFT JOIN the set words (W bounded by
-    # num_bits, both sides tiny relative to the data) — never a
+    # NUM_BITS, both sides tiny relative to the data) — never a
     # per-element map probe
     spark = dim.sparkSession
     dense = (
@@ -122,13 +120,11 @@ def build_bloom(dim: DataFrame, *, num_bits: int = DEFAULT_NUM_BITS) -> DataFram
             F.sort_array(F.collect_list(F.struct("id", "__word"))),
             lambda s: s["__word"],
         ).alias(_WORDS),
-        F.lit(num_bits).alias(_NBITS),
+        F.lit(NUM_BITS).alias(_NBITS),
     )
 
 
-def bloom_prune(
-    fact: DataFrame, sketch: DataFrame, *, num_bits: int | None = None
-) -> DataFrame:
+def bloom_prune(fact: DataFrame, sketch: DataFrame) -> DataFrame:
     """Filter ``fact`` to rows whose ``l_suppkey`` might be in the
     sketch.
 
@@ -144,33 +140,20 @@ def bloom_prune(
     stays JVM-side inside whole-stage codegen.
 
     Probe parameters are the SKETCH'S: bit positions must be derived
-    with the exact ``num_bits`` the sketch was built with, or matching
+    with the exact bit count the sketch was built with, or matching
     fact rows silently vanish — the one failure mode a Bloom prune
-    promises never to have.  It is ALWAYS read from the ``_NBITS``
-    column the sketch row carries (a bounded 1-row lookup — for a
-    parquet-persisted sketch this is a footer-sized read); a value a
-    caller passes (e.g.
-    ``bloom_pruned_join``, which built the sketch in the same plan)
-    is validated eagerly on the driver against the sketch's own
-    column, and a mismatch raises before any plan executes.  Driver
-    validation is robust where a codegen-level row guard is not: the
-    optimizer may reorder or split an AND chain, under which a
-    ``raise_error`` conjunct could be evaluated after — or never,
-    when the probe conjuncts already rejected the row — and
-    mismatched params would silently drop matching fact rows.
+    promises never to have.  It is read eagerly on the driver from
+    the ``_NBITS`` column the sketch row carries (a bounded 1-row
+    lookup — for a parquet-persisted sketch this is a footer-sized
+    read), so a sketch written under another ``NUM_BITS`` still
+    probes with its own geometry.
     """
     # bounded: the sketch is one row; only the int param is fetched
     # (the word array is not selected)
     params = sketch.select(_NBITS).first()
     if params is None:
         raise ValueError("sketch relation is empty — not a built sketch")
-    sketch_bits = int(params[0])
-    if num_bits is not None and num_bits != sketch_bits:
-        raise ValueError(
-            f"bloom_prune params do not match the sketch: passed "
-            f"num_bits={num_bits}, sketch has num_bits={sketch_bits}"
-        )
-    num_bits = sketch_bits
+    num_bits = int(params[0])
     k = F.col("l_suppkey")
     tmp = fact.join(F.broadcast(sketch))
     pos_names: list[str] = []
@@ -194,9 +177,7 @@ def bloom_prune(
     return tmp.where(pred).drop(*_SKETCH_COLS, *pos_names)
 
 
-def bloom_pruned_join(
-    fact: DataFrame, dim: DataFrame, *, num_bits: int = DEFAULT_NUM_BITS
-) -> DataFrame:
+def bloom_pruned_join(fact: DataFrame, dim: DataFrame) -> DataFrame:
     """Inner ``fact ⋈ dim`` on ``l_suppkey = s_suppkey`` with a Bloom
     pre-filter on the fact side:
     dropping fact rows that provably cannot match preserves the inner
@@ -207,9 +188,9 @@ def bloom_pruned_join(
 
     # Staged (r11 advice): the sketch plan is a full dim scan +
     # aggregate with TWO consumers — bloom_prune's eager driver-side
-    # param validation (a 1-row .first()) and the broadcast at join
+    # bit-count read (a 1-row .first()) and the broadcast at join
     # execution.  Unstaged, the dim aggregate ran twice; persisting
-    # the 1-row sketch makes the validation lookup free.
-    sketch = stage(build_bloom(dim, num_bits=num_bits))
-    pruned = bloom_prune(fact, sketch, num_bits=num_bits)
+    # the 1-row sketch makes the lookup free.
+    sketch = stage(build_bloom(dim))
+    pruned = bloom_prune(fact, sketch)
     return pruned.join(dim, pruned["l_suppkey"] == dim["s_suppkey"], "inner")

@@ -27,19 +27,22 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import FINITE_EVENTS_SQL
+
 
 #: EWMA half-life of :func:`ewma_by_key` and its twin: one week.
 HALF_LIFE_S = 7 * 24 * 3600.0
 
 
-def decay_weight(anchor_us: Column) -> Column:
-    """Weight ``2^(-(anchor - ts)/HALF_LIFE_S)`` for one event — 1.0
-    at the anchor, 0.5 one half-life earlier.  Future events (t > anchor)
+def decay_weight() -> Column:
+    """Weight ``2^(-(anchor - ts)/HALF_LIFE_S)`` for one event, the
+    anchor read from ``__anchor_us`` — 1.0 at the anchor, 0.5 one
+    half-life earlier.  Future events (t > anchor)
     would amplify instead of decay; they are the caller's watermark
     problem and weigh > 1 here by design (visible, not clamped)."""
     # cast: the parquet loader yields TIMESTAMP_NTZ, which unix_micros
     # rejects; the session is pinned UTC so the cast is value-exact
-    dt_us = anchor_us - F.unix_micros(F.col("ts").cast("timestamp"))
+    dt_us = F.col("__anchor_us") - F.unix_micros(F.col("ts").cast("timestamp"))
     rate = math.log(0.5) / (HALF_LIFE_S * 1_000_000.0)
     return F.exp(dt_us.cast("double") * F.lit(rate))
 
@@ -57,7 +60,7 @@ def ewma_by_key(events: DataFrame) -> DataFrame:
     ``ts`` are non-NULL — a NULL timestamp has no decay weight,
     so the row is excluded from ``n``/``plain_avg``/``effective_n``
     too; the three output columns always cover the same row set.
-    Non-finite values are the caller's `_finite_value` contract, as
+    Non-finite values are the caller's `finite_value` contract, as
     everywhere in the events family."""
     anchor = events.agg(F.max("ts").alias("__anchor_ts")).select(
         F.unix_micros(F.col("__anchor_ts").cast("timestamp")).alias(
@@ -65,7 +68,7 @@ def ewma_by_key(events: DataFrame) -> DataFrame:
         )
     )
     keys = ["event_type"]
-    w = decay_weight(F.col("__anchor_us"))
+    w = decay_weight()
     v = F.col("value")
     valid = v.isNotNull() & F.col("ts").isNotNull()
     weighted = events.join(F.broadcast(anchor)).select(
@@ -88,10 +91,11 @@ def ewma_by_key(events: DataFrame) -> DataFrame:
     )
 
 
-def ewma_by_key_sql(table: str = "events") -> str:
+def ewma_by_key_sql() -> str:
     """DuckDB twin — identical arithmetic over ``epoch_us`` integers
     (value AND weight guarded to rows where both value and timestamp
-    are non-NULL, exactly like the Spark side)."""
+    are non-NULL, exactly like the Spark side) over the finite events
+    (``FINITE_EVENTS_SQL``)."""
     rate = repr(math.log(0.5) / (HALF_LIFE_S * 1_000_000.0))
     valid = "value IS NOT NULL AND ts IS NOT NULL"
     return f"""
@@ -99,10 +103,10 @@ WITH anchored AS (
   SELECT event_type,
          CASE WHEN {valid} THEN value END AS __v,
          CASE WHEN {valid} THEN
-           exp(CAST((SELECT epoch_us(max(ts)) FROM {table})
+           exp(CAST((SELECT epoch_us(max(ts)) FROM {FINITE_EVENTS_SQL})
                     - epoch_us(ts) AS DOUBLE) * ({rate}))
          END AS __w
-  FROM {table}
+  FROM {FINITE_EVENTS_SQL}
 )
 SELECT event_type, count(__v) AS n,
        round(sum(__w * __v) / sum(__w), 6) + 0 AS ewma,

@@ -12,47 +12,37 @@ Verification is exact ``levenshtein ≤ k``, which Spark and DuckDB
 implement with the same unrestricted-edit-distance DP, so the oracle
 twin agrees exactly.
 
-Two recall trades define the method, both deliberate:
-- pairs in DIFFERENT blocks are never candidates (choose a block the
-  expected duplicates agree on — a prefix, soundex, zip code);
+The block is the 14-char ``c_name`` prefix.  Two recall trades
+define the method, both deliberate:
+- pairs in DIFFERENT blocks are never candidates (a typo inside the
+  prefix splits a pair);
 - within a block, only pairs ≤ 3 apart in sort order are
   candidates (prefix typos move a record far away in the order).
-The standard upgrade for both is multi-pass: re-run with different
-block/sort keys and union the results — it composes from this same
-operator.  ``block_col=None`` degrades to one global window (fine for
-small dims; at scale always block).
+The standard upgrade for both is multi-pass: re-run on a transformed
+key (e.g. the reversed name) and union the results — it composes
+from this same operator.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def fuzzy_pairs_sorted_neighborhood(
-    df: DataFrame, block_col: Column | str | None = None
-) -> DataFrame:
+def fuzzy_pairs_sorted_neighborhood(df: DataFrame) -> DataFrame:
     """Pairs ``(id_a, id_b, distance)`` of ``c_custkey`` ids with
     edit distance ≤ 1 among rows within 3 positions in ``c_name``'s
-    sort order inside each block (ties broken by id — deterministic
-    for unique (key, id))."""
+    sort order inside each block of names sharing their first 14
+    characters (ties broken by id — deterministic for unique (key,
+    id))."""
     id_col, key_col = "c_custkey", "c_name"
     # NULLS FIRST explicitly on both sort keys: Spark's ASC default,
     # but the SQL twin must pin the same (DuckDB defaults NULLS LAST),
     # else a NULL id tie-breaking among duplicate keys lands on the
     # opposite side of the neighborhood per engine.
     order = [F.asc_nulls_first(key_col), F.asc_nulls_first(id_col)]
-    if block_col is not None:
-        blk = F.col(block_col) if isinstance(block_col, str) else block_col
-        # project the block expression IN the same select that narrows
-        # the frame — narrowing first would drop any OTHER column the
-        # block expression references (e.g. block_col="zip", the
-        # docstring's own suggested use)
-        base = df.select(F.col(id_col), F.col(key_col), blk.alias("__blk"))
-        w = Window.partitionBy("__blk").orderBy(*order)
-    else:
-        base = df.select(F.col(id_col), F.col(key_col))
-        w = Window.orderBy(*order)
+    base = df.select(id_col, key_col)
+    w = Window.partitionBy(F.substring(key_col, 1, 14)).orderBy(*order)
     cols = [
         F.struct(
             F.lead(id_col, i).over(w).alias("nid"),

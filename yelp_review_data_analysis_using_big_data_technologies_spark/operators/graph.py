@@ -522,12 +522,14 @@ def k_core(pairs: DataFrame) -> DataFrame:
     )
 
 
-def k_core_sql(pairs_sql: str) -> str:
-    """DuckDB twin of :func:`k_core` (``CORE_K``, ``PEEL_ROUNDS``) —
-    the same peel rounds unrolled
+def k_core_sql() -> str:
+    """DuckDB twin of :func:`k_core` (``CORE_K``, ``PEEL_ROUNDS``) over
+    the banded near-dup pairs — the same peel rounds unrolled
     as chained MATERIALIZED CTEs (each round's edge relation is
     referenced three times — two degree legs + the next filter — and
     an inlined chain re-evaluates exponentially, the MMR lesson)."""
+    from yelp_review_data_analysis_using_big_data_technologies_spark.llm.dedup import near_dup_banded_sql
+
     steps = []
     for t in range(PEEL_ROUNDS):
         steps.append(
@@ -549,7 +551,7 @@ def k_core_sql(pairs_sql: str) -> str:
 WITH canon AS MATERIALIZED (
   SELECT DISTINCT least(id_a, id_b) AS __a,
                   greatest(id_a, id_b) AS __b
-  FROM ({pairs_sql})
+  FROM ({near_dup_banded_sql()})
   WHERE id_a IS NOT NULL AND id_b IS NOT NULL AND id_a <> id_b
 ), e0 AS MATERIALIZED (SELECT * FROM canon),
 {chain}

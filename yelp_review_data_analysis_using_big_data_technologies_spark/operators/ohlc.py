@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import FINITE_EVENTS_SQL
+
 #: sentinel for NULL tie-break ids — far below any real BIGINT id so
 #: both engines order NULL-id rows first, identically.
 _NULL_ID_SENTINEL = -(2**62)
@@ -75,17 +77,18 @@ def ohlc_bars(events: DataFrame) -> DataFrame:
     )
 
 
-def ohlc_bars_sql(table: str = "events") -> str:
+def ohlc_bars_sql() -> str:
     """DuckDB twin of :func:`ohlc_bars` — the deliberately naive
     row_number formulation (QUALIFY-style argmin/argmax) against
-    which the one-pass min(struct) plan is verified."""
+    which the one-pass min(struct) plan is verified.  Reads the finite
+    events (``FINITE_EVENTS_SQL``)."""
     return f"""
 WITH e AS (
   SELECT event_type, date_trunc('hour', ts) AS bucket_ts,
          ts AS __ts,
          COALESCE(event_id, {_NULL_ID_SENTINEL}) AS __id,
          value AS __v
-  FROM {table}
+  FROM {FINITE_EVENTS_SQL}
   WHERE ts IS NOT NULL AND value IS NOT NULL
         AND isfinite(value)
 ), r AS (

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import FINITE_EVENTS_SQL
+
 
 def distributed_rank(df: DataFrame) -> DataFrame:
     """Attach ``rnk``, ``dense_rnk``, ``pct_rank`` for ``value``
@@ -82,8 +84,9 @@ def distributed_rank(df: DataFrame) -> DataFrame:
     )
 
 
-def distributed_rank_sql(table: str) -> str:
-    """DuckDB twin over ``table``'s ``(event_id, event_type, value)`` —
+def distributed_rank_sql() -> str:
+    """DuckDB twin over the finite events' ``(event_id, event_type,
+    value)`` (``FINITE_EVENTS_SQL``) —
     the NAIVE window formulation the decomposition must equal
     (rank/dense_rank/percent_rank, descending, NULLs last)."""
     over = "(PARTITION BY event_type ORDER BY value DESC NULLS LAST)"
@@ -94,5 +97,5 @@ SELECT event_id, event_type, value,
        round(CASE WHEN count(*) OVER (PARTITION BY event_type) > 1
              THEN percent_rank() OVER {over} ELSE 0.0 END, 6) + 0
          AS pct_rank
-FROM {table}
+FROM {FINITE_EVENTS_SQL}
 """

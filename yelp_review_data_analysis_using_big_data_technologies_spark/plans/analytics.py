@@ -21,35 +21,6 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.operators.relat
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import load_table
 
 
-def totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q1 — the dashboard's headline tiles (Total Businesses / Reviews
-    / Users ≙ distinct parts / lineitems / distinct customers).
-
-    ``countDistinct`` is exact (two-phase hash agg); at 100 TB swap to
-    ``approx_count_distinct`` (HLL, no second shuffle) — tile-level
-    accuracy doesn't need exactness.
-    """
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    li = lineitem.agg(
-        F.countDistinct("l_partkey").alias("total_parts"),
-        F.count(F.lit(1)).alias("total_lineitems"),
-    )
-    od = orders.agg(F.countDistinct("o_custkey").alias("total_customers"))
-    return li.crossJoin(od)
-
-
-def avg_rating(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 — Average Ratings tile (avg over the fact table)."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    return lineitem.agg(
-        F.round(F.avg("l_quantity"), 2).alias("avg_quantity"),
-        F.round(F.avg(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-            "avg_net_price"
-        ),
-    )
-
-
 def share_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 — donut chart: count per group + percent-of-total share.
 
@@ -185,41 +156,15 @@ def rollup_slicers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cube_slicers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9b — CUBE variant: every slicer combination incl. per-status
-    margins the rollup lacks."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    return lineitem.cube("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-def grouping_sets_slicers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9c — explicit GROUPING SETS: exactly the slicer combinations
-    the dashboard needs ((flag,status), (flag), ()) without paying for
-    the per-status margin CUBE would also compute.  At scale the
-    grouping-set list IS the cost model: one partial-agg pass expands
-    each input row once per set, so pruning sets prunes shuffle."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    return lineitem.groupingSets(
-        [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
-        "l_returnflag",
-        "l_linestatus",
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-    )
-
-
 def dashboard_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1+Q2+Q5b panel — the dashboard's scalar tiles (totals, averages,
-    most-active-day argmax) as ONE single-row frame.  Unlike composing
-    the single-tile functions (which would scan lineitem twice — once
-    for totals, once for averages), the panel computes all four
-    lineitem metrics in ONE aggregation pass over the fact table; the
-    orders side pays one scalar agg plus the grouped argmax.  The tiny
-    1-row cross-joins are broadcast no-ops.  One driver-checked row
-    verifies all three tile queries."""
+    most-active-day argmax) as ONE single-row frame.  The totals and
+    average tiles share ONE aggregation pass over the fact table (a
+    tile per function would scan lineitem once per tile); the orders
+    side pays one scalar agg plus the grouped argmax.  The tiny 1-row
+    cross-joins are broadcast no-ops.  ``countDistinct`` is exact
+    (two-phase hash agg); at 100 TB ``approx_count_distinct`` (HLL, no
+    second shuffle) is accurate enough for a tile."""
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     li = lineitem.agg(
@@ -262,7 +207,7 @@ def slicer_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return stack_legs(
         {
-            "rollup": lineitem.rollup("l_returnflag", "l_linestatus").agg(*aggs()),
+            "rollup": rollup_slicers(spark, sf_dir),
             "cube": lineitem.cube("l_returnflag", "l_linestatus").agg(*aggs()),
             "grouping_sets": lineitem.groupingSets(
                 [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],

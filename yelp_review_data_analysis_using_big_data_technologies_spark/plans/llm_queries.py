@@ -344,15 +344,6 @@ def doc_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive closure of the banded-LSH near-dup pairs: iterative
-    min-label connected components — the duplicate GROUPS a corpus
-    dedup keeps one survivor from (pairs alone miss A~B~C chains)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ldd.near_dup_pairs_banded(docs).select("id_a", "id_b")
-    return lcc.connected_components(pairs).orderBy("doc_id")
-
-
 def corpus_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware dedup retention (round 5): near-dup clusters keep
     their HIGHEST-:func:`llm.text.quality_score` member instead of the
@@ -457,7 +448,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership → achieved mixture.  See
     :func:`llm.sampling.mixture_report`."""
     docs = load_table(spark, sf_dir, "documents")
-    return lsmp.mixture_report(docs, ltx.token_count())
+    return lsmp.mixture_report(docs)
 
 
 # --------------------------------------------------------------------------
@@ -511,27 +502,6 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("lang", "lang_pred")
     )
-
-
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc rolling-hash fingerprint (min-md5 3-gram shingle),
-    staged via ``shingled`` so the tokenizer runs once per doc."""
-    docs = load_table(spark, sf_dir, "documents")
-    return ltx.shingled(docs, ["doc_id"]).select(
-        "doc_id",
-        F.array_min(F.transform(F.col("__sh"), F.md5)).alias("fp"),
-    )
-
-
-def doc_quality_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-score banding — the filter stage of a data pipeline."""
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        bucketize(
-            ltx.quality_score(), [(0.5, "low"), (0.75, "mid")]
-        ).alias("band")
-    )
-    return scored.groupBy("band").agg(F.count(F.lit(1)).alias("n_docs"))
 
 
 def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,12 +625,12 @@ def _freeze_manifest(
     # structural, not an optimizer artifact — exchange reuse does not
     # survive AQE replanning splits on a real cluster.
     deduped = lstg.stage(
-        ldd.near_dup_removal(clean).filter(F.expr(_CORPUS_PRED))
+        ldd.near_dup_removal(clean).filter(F.expr(ldec.CORPUS_PRED))
     )
     # 3: benchmark fingerprint comes from the RAW table (the eval
     # suite is fixed before any corpus processing); bench rows leave
     # the training corpus outright
-    bench = docs.filter(F.expr(_BENCH_PRED))
+    bench = docs.filter(F.expr(ldec.BENCH_PRED))
     decont = ldec.decontaminate(deduped, bench)
     # 4: quality gate, then shed text — downstream stages only need
     # (doc_id, lang, n_tokens).  EAGER localCheckpoint, not persist
@@ -868,10 +838,10 @@ def corpus_freeze_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = docs.filter(F.col("doc_id") >= _DELTA_SPLIT_ID)
     admitted = lstg.stage(
         ldd.dedup_against_corpus(corpus, delta).filter(
-            F.expr(_CORPUS_PRED)
+            F.expr(ldec.CORPUS_PRED)
         )
     )
-    bench = docs.filter(F.expr(_BENCH_PRED))
+    bench = docs.filter(F.expr(ldec.BENCH_PRED))
     decont = ldec.decontaminate(admitted, bench)
     return _quality_gated(decont).orderBy("doc_id")
 
@@ -905,8 +875,8 @@ def corpus_freeze_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drop anti-join leg
     clean = lstg.stage(ldd.exact_dedup(docs).drop("content_hash"))
     nd_surv = lstg.stage(ldd.near_dup_removal(clean))
-    corpus = lstg.stage(nd_surv.filter(F.expr(_CORPUS_PRED)))
-    bench = docs.filter(F.expr(_BENCH_PRED))
+    corpus = lstg.stage(nd_surv.filter(F.expr(ldec.CORPUS_PRED)))
+    bench = docs.filter(F.expr(ldec.BENCH_PRED))
     decont = lstg.stage(ldec.decontaminate(corpus, bench))
     # narrow from here down — eager localCheckpoint, not lazy persist
     # (r15 opt, the _freeze_manifest finding): each frame feeds 2-3
@@ -936,7 +906,7 @@ def corpus_freeze_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .unionByName(
-            _tag(nd_surv.filter(~F.expr(_CORPUS_PRED)), "benchmark_eval")
+            _tag(nd_surv.filter(~F.expr(ldec.CORPUS_PRED)), "benchmark_eval")
         )
         .unionByName(
             _tag(
@@ -995,7 +965,7 @@ def corpus_freeze_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = drops.filter(
         F.col("stage").isin("exact_dup", "near_dup")
-    ).filter(F.expr(_CORPUS_PRED))
+    ).filter(F.expr(ldec.CORPUS_PRED))
     contam_rows = _panel(
         cand.join(
             ldec.contamination_overlap(cand, bench).select("doc_id"),
@@ -1893,12 +1863,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # content hygiene: decontamination, repetition, PII (round 4)
 # --------------------------------------------------------------------------
 
-#: Deterministic benchmark carve-out for the decontamination entry:
-#: every 20th doc plays the eval set; the rest is the corpus.
-_BENCH_PRED = "doc_id % 20 = 0"
-_CORPUS_PRED = "doc_id % 20 <> 0"
-
-
 def vec_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization (m=4 subspaces × k=16 learned centroids →
     16-bit codes): per-subspace KMeans codebooks, literal-inlined
@@ -1922,21 +1886,11 @@ def vec_quantize_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doc_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters via alternating large-star/small-star
-    contraction — the O(log² n)-round CC path for long-diameter
-    graphs; same oracle as the min-label entry (the closure is the
-    closure)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ldd.near_dup_pairs_banded(docs).select("id_a", "id_b")
-    return lcc.connected_components_alternating(pairs).orderBy("doc_id")
-
-
 def doc_dup_clusters_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH connected-components algorithms over ONE staged pair set,
     tagged and stacked: min-label propagation (diameter-bounded
     rounds) and alternating large-star/small-star (O(log² n) rounds).
-    The pair generation — which dominates either single entry's cost —
+    The pair generation — which dominates either algorithm's cost —
     runs once, and the panel hash verifies the two algorithms agree
     EXACTLY on every component label (they must: the closure is the
     closure; the oracle is one recursive CTE emitted under both
@@ -1960,8 +1914,8 @@ def doc_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
     The benchmark fingerprint is tiny → map-side semi-join; the only
     shuffle is the per-doc overlap count."""
     docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.expr(_CORPUS_PRED))
-    bench = docs.filter(F.expr(_BENCH_PRED))
+    corpus = docs.filter(F.expr(ldec.CORPUS_PRED))
+    bench = docs.filter(F.expr(ldec.BENCH_PRED))
     return ldec.contamination_overlap(corpus, bench).orderBy("doc_id")
 
 
@@ -2016,6 +1970,11 @@ def _quality_score_sql() -> str:
         f" + 0.3 * (CASE WHEN {atl} >= 3.0 AND {atl} <= 10.0 THEN 1.0 ELSE 0.0 END))"
     )
 
+
+_LANG_ID_SQL = (
+    f"SELECT lang, {ltx.lang_id_sql()} AS lang_pred, count(*) AS n "
+    "FROM documents GROUP BY 1, 2 ORDER BY lang, lang_pred"
+)
 
 _FP_SQL = (
     f"list_aggregate(list_transform("
@@ -2212,11 +2171,9 @@ def _training_freeze_sql(balance: str = "lang") -> str:
         f"      SELECT id_b FROM ({ldd.near_dup_banded_sql(table='clean1')})"
         "    ) p WHERE p.id_b = d.doc_id)"
         "), corpus AS ("
-        f"  SELECT * FROM clean2 WHERE {_CORPUS_PRED}"
+        f"  SELECT * FROM clean2 WHERE {ldec.CORPUS_PRED}"
         "), flagged AS ("
-        + ldec.contamination_overlap_sql(
-            "corpus", f"(SELECT * FROM documents WHERE {_BENCH_PRED})"
-        )
+        + ldec.contamination_overlap_sql("corpus")
         + "), decont AS ("
         "  SELECT c.* FROM corpus c WHERE NOT EXISTS ("
         "    SELECT 1 FROM flagged f WHERE f.doc_id = c.doc_id)"
@@ -2265,11 +2222,9 @@ def _freeze_audit_sql() -> str:
         f"      SELECT id_b FROM ({ldd.near_dup_banded_sql(table='clean1')})"
         "    ) p WHERE p.id_b = d.doc_id)"
         "), corpus AS ("
-        f"  SELECT * FROM clean2 WHERE {_CORPUS_PRED}"
+        f"  SELECT * FROM clean2 WHERE {ldec.CORPUS_PRED}"
         "), flagged AS ("
-        + ldec.contamination_overlap_sql(
-            "corpus", f"(SELECT * FROM documents WHERE {_BENCH_PRED})"
-        )
+        + ldec.contamination_overlap_sql("corpus")
         + "), decont AS ("
         "  SELECT c.* FROM corpus c WHERE NOT EXISTS ("
         "    SELECT 1 FROM flagged f WHERE f.doc_id = c.doc_id)"
@@ -2290,7 +2245,7 @@ def _freeze_audit_sql() -> str:
         "  SELECT d.doc_id, d.text, 'near_dup' FROM clean1 d"
         "  WHERE NOT EXISTS (SELECT 1 FROM clean2 c WHERE c.doc_id = d.doc_id)"
         "  UNION ALL"
-        f"  SELECT doc_id, text, 'benchmark_eval' FROM clean2 WHERE NOT ({_CORPUS_PRED})"
+        f"  SELECT doc_id, text, 'benchmark_eval' FROM clean2 WHERE NOT ({ldec.CORPUS_PRED})"
         "  UNION ALL"
         "  SELECT d.doc_id, d.text, 'contaminated' FROM corpus d"
         "  WHERE NOT EXISTS (SELECT 1 FROM decont c WHERE c.doc_id = d.doc_id)"
@@ -2300,8 +2255,7 @@ def _freeze_audit_sql() -> str:
         "), audflag AS ("
         + ldec.contamination_overlap_sql(
             "(SELECT doc_id, text FROM drops WHERE stage IN "
-            f"('exact_dup', 'near_dup') AND {_CORPUS_PRED})",
-            f"(SELECT * FROM documents WHERE {_BENCH_PRED})",
+            f"('exact_dup', 'near_dup') AND {ldec.CORPUS_PRED})"
         )
         + ") "
         "SELECT 'stage' AS grp, stage AS key, count(*) AS n_docs, "
@@ -2352,7 +2306,7 @@ ORACLES = {
     ),
     "doc_near_dup_banded": ldd.near_dup_banded_sql(),
     "doc_pagerank": pagerank_sql(ldd.near_dup_banded_sql()),
-    "doc_graph_kcore": kcsql(ldd.near_dup_banded_sql()),
+    "doc_graph_kcore": kcsql(),
     "doc_graph_triangles": triangle_counts_sql(ldd.near_dup_banded_sql()),
     "doc_pagerank_weighted": pagerank_sql(ldd.near_dup_banded_sql(), weight="jaccard"),
     "corpus_shuffle_order": (
@@ -2510,16 +2464,14 @@ ORDER BY s.split
         f"WITH pairs AS ({ldd.near_dup_banded_sql()}), "
         "adm AS ("
         "  SELECT * FROM documents d "
-        f" WHERE d.doc_id >= {_DELTA_SPLIT_ID} AND {_CORPUS_PRED} "
+        f" WHERE d.doc_id >= {_DELTA_SPLIT_ID} AND {ldec.CORPUS_PRED} "
         "  AND NOT EXISTS (SELECT 1 FROM documents c "
         f"    WHERE c.doc_id < {_DELTA_SPLIT_ID} "
         "    AND sha256(c.text) = sha256(d.text)) "
         "  AND NOT EXISTS (SELECT 1 FROM pairs p "
         f"    WHERE p.id_a < {_DELTA_SPLIT_ID} AND p.id_b = d.doc_id)"
         "), flagged AS ("
-        + ldec.contamination_overlap_sql(
-            "adm", f"(SELECT * FROM documents WHERE {_BENCH_PRED})"
-        )
+        + ldec.contamination_overlap_sql("adm")
         + ") "
         f"SELECT doc_id, lang, CAST(len({_TOK}) AS BIGINT) AS n_tokens "
         "FROM adm a "
@@ -2527,7 +2479,6 @@ ORDER BY s.split
         f"AND {_quality_score_sql()} > 0.5 "
         "ORDER BY doc_id"
     ),
-    "doc_dup_clusters": lcc.connected_components_sql(ldd.near_dup_banded_sql()),
     "corpus_keep_best": (
         f"WITH __cc AS ({lcc.connected_components_sql(ldd.near_dup_banded_sql())}), "
         "__scored AS ("
@@ -2556,7 +2507,7 @@ ORDER BY s.split
         + lsmp.weighted_take_sql()
         + ") ORDER BY doc_id"
     ),
-    "corpus_mixture_sample": lsmp.mixture_report_sql(f"len({_TOK})"),
+    "corpus_mixture_sample": lsmp.mixture_report_sql(),
     "doc_dup_clusters_panel": (
         "WITH cc AS ("
         + lcc.connected_components_sql(ldd.near_dup_banded_sql())
@@ -2564,13 +2515,9 @@ ORDER BY s.split
         "UNION ALL SELECT 'star', doc_id, cluster_id FROM cc "
         "ORDER BY algo, doc_id"
     ),
-    "doc_dup_clusters_star": lcc.connected_components_sql(
-        ldd.near_dup_banded_sql()
-    ),
     "doc_decontaminated": (
         ldec.contamination_overlap_sql(
-            f"(SELECT * FROM documents WHERE {_CORPUS_PRED.replace('<>', '!=')})",
-            f"(SELECT * FROM documents WHERE {_BENCH_PRED})",
+            f"(SELECT * FROM documents WHERE {ldec.CORPUS_PRED.replace('<>', '!=')})"
         )
         + " ORDER BY doc_id"
     ),
@@ -2628,11 +2575,6 @@ ORDER BY s.split
         "len(regexp_extract_all(text, '\\w+|[^\\w \\t\\n\\x0B\\f\\r]+')) AS bpe_tokens, "
         "length(text) AS n_chars_live FROM documents"
     ),
-    "doc_lang_id": (
-        f"SELECT lang, {ltx.lang_id_sql()} AS lang_pred, count(*) AS n "
-        "FROM documents GROUP BY 1, 2 ORDER BY lang, lang_pred"
-    ),
-    "doc_fingerprint": f"SELECT doc_id, {_FP_SQL} AS fp FROM documents",
     "doc_profile": (
         f"SELECT doc_id, len({_TOK}) AS ws_tokens, "
         "len(regexp_extract_all(text, '\\w+|[^\\w \\t\\n\\x0B\\f\\r]+')) AS bpe_tokens, "
@@ -2640,11 +2582,6 @@ ORDER BY s.split
         f"CASE WHEN {_quality_score_sql()} <= 0.5 THEN 'low' "
         f"WHEN {_quality_score_sql()} <= 0.75 THEN 'mid' ELSE 'high' END AS band "
         "FROM documents"
-    ),
-    "doc_quality_bands": (
-        f"SELECT CASE WHEN {_quality_score_sql()} <= 0.5 THEN 'low' "
-        f"WHEN {_quality_score_sql()} <= 0.75 THEN 'mid' ELSE 'high' END AS band, "
-        "count(*) AS n_docs FROM documents GROUP BY 1"
     ),
     # incremental embedding dedup: R-S form of the cosine-near-dup
     # twin (same frozen planes/buckets; NOT EXISTS matches the

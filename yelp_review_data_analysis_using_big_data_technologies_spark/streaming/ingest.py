@@ -111,7 +111,7 @@ def _delta_features(delta: DataFrame) -> DataFrame:
             "__sig",
             F.when(
                 F.col("__sz") > 0,
-                minhash_signature_from(F.col("__sh")),
+                minhash_signature_from(),
             ),
         )
     )
@@ -125,7 +125,7 @@ def _delta_features(delta: DataFrame) -> DataFrame:
         "__sh",
         F.when(
             F.col("__sz") > 0,
-            band_key_array(F.col("__sig")),
+            band_key_array(),
         )
         .otherwise(F.array().cast("array<string>"))
         .alias("__bands"),

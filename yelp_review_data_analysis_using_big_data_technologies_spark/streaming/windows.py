@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import FINITE_EVENTS_SQL
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import read_parquet
 
@@ -194,10 +195,11 @@ def tumbling_ohlc(events: DataFrame) -> DataFrame:
     )
 
 
-def tumbling_ohlc_sql(table: str = "events") -> str:
+def tumbling_ohlc_sql() -> str:
     """DuckDB twin of :func:`tumbling_ohlc` — same epoch-floor window
     grid as :func:`sliding_counts_sql`, same row_number argmin/argmax
-    formulation as the batch OHLC twin."""
+    formulation as the batch OHLC twin, over the same finite events
+    (``FINITE_EVENTS_SQL``)."""
     from yelp_review_data_analysis_using_big_data_technologies_spark.operators.ohlc import _NULL_ID_SENTINEL
 
     return f"""
@@ -207,7 +209,7 @@ WITH e AS (
          event_type, ts,
          COALESCE(event_id, {_NULL_ID_SENTINEL}) AS __id,
          value AS __v
-  FROM {table}
+  FROM {FINITE_EVENTS_SQL}
   WHERE ts IS NOT NULL AND value IS NOT NULL AND isfinite(value)
 ), r AS (
   SELECT *,
