@@ -1924,13 +1924,10 @@ def _q_json_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan), aggregate per language.  The oracle reads the ORIGINAL
     parquet, so a green hash proves the JSON round-trip is lossless."""
     staged = _staged_json_documents(spark, sf_dir)
-    return (
-        staged.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").alias("sum_chars"),
-            F.count_distinct("source").alias("n_sources"),
-        )
+    return staged.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("sum_chars"),
+        F.count_distinct("source").alias("n_sources"),
     )
 
 
@@ -1941,13 +1938,10 @@ def _q_orc_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash proves the ORC round-trip (types incl. date/decimal-free
     schema, partition column restore) is lossless."""
     staged = _staged_orc_orders(spark, sf_dir)
-    return (
-        staged.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
-            F.count_distinct("o_custkey").alias("n_custs"),
-        )
+    return staged.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
+        F.count_distinct("o_custkey").alias("n_custs"),
     )
 
 

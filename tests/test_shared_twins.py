@@ -127,7 +127,7 @@ def _registered_legs(files, timed):
         if builder in defs:
             entries[builder].append(key.value)
     legs = set()
-    for builder, callers in list(entries.items()):
+    for builder, callers in entries.items():
         for node in ast.walk(defs[builder]):
             if isinstance(node, ast.Call):
                 for leg in entries.get(ref(node.func, builder[0]), []):

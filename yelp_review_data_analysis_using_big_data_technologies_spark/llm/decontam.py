@@ -43,6 +43,7 @@ from .text import shingled
 BENCH_PRED = "doc_id % 20 = 0"
 CORPUS_PRED = "doc_id % 20 <> 0"
 
+
 def contamination_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """(doc_id, n_shared) for corpus docs sharing ≥ 2
     distinct 3-grams with ANY benchmark text.  The

@@ -461,7 +461,7 @@ def mixture_report(df: DataFrame) -> DataFrame:
     should land on the target weight (up to per-document sampling
     granularity)."""
     tok = ltx.token_count().cast("bigint")
-    rates = mixture_rates(df, MIXTURE_WEIGHTS, domain_col="lang", tokens=ltx.token_count())
+    rates = mixture_rates(df, MIXTURE_WEIGHTS, domain_col="lang", tokens=tok)
     d = df.filter(F.col("lang").isin(list(MIXTURE_WEIGHTS))).select(
         F.col("lang").alias("domain"),
         F.col("doc_id").alias("__id"),

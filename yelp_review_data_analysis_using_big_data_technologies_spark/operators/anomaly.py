@@ -17,7 +17,8 @@ fences so boundary points classify identically in both engines
 (rounding only happens at the output edge).
 
 Exact percentiles sort per key inside the aggregate — the documented
-trade for engine-exact twins (same as dashboard_price_quantiles);
+trade for engine-exact twins (same as the price-quantiles leg of
+dashboard_metrics_panel);
 swap in percentile_approx at production scale when ±ε is acceptable.
 """
 
