@@ -90,8 +90,9 @@ ALLOWED = {
             "the twin's input edge relation, the SQL side of the "
             "operator's DataFrame argument: the entries feed it the "
             f"banded near-dup pairs, and {test} runs it over literal "
-            "chain, star, cycle and clique edge lists that no documents "
-            "fixture produces through the banded LSH"
+            "edge lists (star-of-stars, complete bipartite, 2-node "
+            "cliques, triangles) that no documents fixture produces "
+            "through the banded LSH"
         )
         for twin, test in (
             ("llm/clusters.py::connected_components_sql", "tests/test_graph_topologies.py"),
