@@ -904,9 +904,10 @@ def _staged_orc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 end-to-end — stage ``nation`` out as headered CSV, re-read
-    with the explicit schema, join back to region and aggregate; the
-    oracle reads the ORIGINAL parquet, so a green hash proves the CSV
-    round-trip (quoting, header, types) is lossless."""
+    with the explicit schema, join back to region and aggregate (a leg
+    of ``ingest_roundtrip_panel``, whose twin reads the ORIGINAL
+    parquet, so a green hash proves the CSV round-trip — quoting,
+    header, types — is lossless)."""
     staged = _staged_csv_nation(spark, sf_dir)
     region = load_table(spark, sf_dir, "region")
     return (
@@ -1921,8 +1922,9 @@ def _q_json_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 end-to-end — the reference's ingest step is JSON-lines →
     staging (scripts/etl.py:21-27).  Stage ``documents`` out as
     JSON-lines, re-read it with the explicit schema (no inference
-    scan), aggregate per language.  The oracle reads the ORIGINAL
-    parquet, so a green hash proves the JSON round-trip is lossless."""
+    scan), aggregate per language.  A leg of
+    ``ingest_roundtrip_panel``, whose twin reads the ORIGINAL parquet,
+    so a green hash proves the JSON round-trip is lossless."""
     staged = _staged_json_documents(spark, sf_dir)
     return staged.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1934,9 +1936,10 @@ def _q_json_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_orc_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC end-to-end — stage ``orders`` out as ORC (partitioned by
     priority so the re-read exercises partition discovery), re-read
-    and aggregate.  The oracle reads the ORIGINAL parquet, so a green
-    hash proves the ORC round-trip (types incl. date/decimal-free
-    schema, partition column restore) is lossless."""
+    and aggregate.  A leg of ``ingest_roundtrip_panel``, whose twin
+    reads the ORIGINAL parquet, so a green hash proves the ORC
+    round-trip (types incl. date/decimal-free schema, partition column
+    restore) is lossless."""
     staged = _staged_orc_orders(spark, sf_dir)
     return staged.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -3516,7 +3519,7 @@ ORACLES["doc_text_panel"] = (
     "UNION ALL "
     "SELECT 'lang_id', concat_ws('|', lang, lang_pred), CAST(n AS BIGINT), "
     "NULL, NULL, NULL, NULL "
-    f"FROM ({llm_queries._LANG_ID_SQL}) "
+    f"FROM ({llm_queries.LANG_ID_SQL}) "
     "UNION ALL "
     "SELECT 'shingle_top10', shingle, CAST(n AS BIGINT), "
     "NULL, NULL, NULL, NULL "

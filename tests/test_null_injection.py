@@ -187,7 +187,6 @@ ENTRIES = [
     # merge through the __HIVE_DEFAULT_PARTITION__ path)
     "doc_dup_clusters_panel",
     "doc_text_panel",
-    "doc_profile",
     "multimodal_features",
     "multimodal_frame_sample",
     "events_analytics_panel",

@@ -44,7 +44,7 @@ twice, and a changed default would silently stop reaching that call.
 A different name that happens to hold the same value is left alone:
 a module constant shared with a DuckDB twin is how a call pins its
 dial.  A third fails on a call that passes a keyword, or more
-positional arguments, than any package function of that name
+positional arguments, than any package function the call reaches
 accepts: a folded parameter a call still sets, which the other scans
 cannot see and which fails only when that call runs."""
 
@@ -231,7 +231,7 @@ class _File:
     ``functools.partial`` and the file's own definitions."""
 
     def __init__(self, path, tree, funcs):
-        self.tree, self.funcs = tree, funcs
+        self.path, self.tree, self.funcs = path, tree, funcs
         package = path[:-3].split(os.sep)[:-1]
         self.aliases, self.external, self.partials = {}, set(), set()
         self.origin = {}  # local name → dotted module it was imported from
@@ -271,15 +271,15 @@ class _File:
             return func.attr
         return None
 
-    def reaches(self, path, func, f):
-        """Whether a call of ``func`` in this file (``path``) is a call
-        of package function ``f`` for the required-parameter scan: a
-        private function is reached from its own module or through an
-        import of its module, a public one by name."""
+    def reaches(self, func, f):
+        """Whether a call of ``func`` in this file is a call of package
+        function ``f``: a private function is reached from its own
+        module or through an import of its module, a public one by
+        name."""
         if not f.node.name.startswith("_"):
             return True
         module = self._module_of(func)
-        return module == f.module or (module is None and f.path == path)
+        return module == f.module or (module is None and f.path == self.path)
 
     def _module_of(self, func):
         """Dotted module a call target was imported from, else ``None``."""
@@ -293,11 +293,13 @@ class _File:
 
     def resolve(self, call):
         """``(kind, target, args, func)`` for ``call``: kind ``"package"``
-        (target: the package functions of that name), ``"local"`` (a
-        definition in this file), ``"unnamed"`` (a local value, a
-        subscript, a call result) or ``None`` (a method, a builtin or a
-        non-package function); ``func`` is the called expression, the
-        partial's first argument for a ``functools.partial``."""
+        (target: the package functions of that name the call reaches),
+        ``"local"`` (a definition in this file, such as a nested helper
+        named like another module's private function), ``"unnamed"`` (a
+        local value, a subscript, a call result) or ``None`` (a method,
+        a builtin or a non-package function); ``func`` is the called
+        expression, the partial's first argument for a
+        ``functools.partial``."""
         func, args = call.func, call.args
         if args and (
             (isinstance(func, ast.Name) and func.id in self.partials)
@@ -311,7 +313,9 @@ class _File:
             func, args = args[0], args[1:]
         name = self.name_of(func)
         if name in self.funcs and not (isinstance(func, ast.Name) and func.id in self.external):
-            return "package", self.funcs[name], args, func
+            reached = [f for f in self.funcs[name] if self.reaches(func, f)]
+            if reached:
+                return "package", reached, args, func
         if isinstance(func, ast.Attribute):
             return None, None, args, func
         if isinstance(func, ast.Name):
@@ -404,13 +408,12 @@ def _scan(files):
                 ):
                     unknown.append(f"{path}:{node.lineno} {c.name_of(func)}({len(args)} positionals)")
                 for f in target:
-                    if c.reaches(path, func, f):
-                        f.call(
-                            args,
-                            node.keywords,
-                            lambda v, imports=c.imports: key(v, imports),
-                            f"{path}:{node.lineno}",
-                        )
+                    f.call(
+                        args,
+                        node.keywords,
+                        lambda v, imports=c.imports: key(v, imports),
+                        f"{path}:{node.lineno}",
+                    )
                     forward(f.node, node.keywords)
             elif kind == "local" and not isinstance(target, ast.ClassDef):
                 forward(target, node.keywords)
@@ -644,8 +647,10 @@ def test_scan_flags_a_keyword_no_target_accepts():
             "def f(a, k=1):\n    return a\n"
             "def g(a, **kw):\n    return a\n"
             "def run(df):\n    f(df, k=2)\n    g(df, any=1)\n    return f(df, gone=3)\n"
+            # a nested helper is not another module's private namesake
+            "def run2(df):\n    def _b(x, n):\n        return x\n    return _b(df, n=1)\n"
         ),
-        f"{PKG}/other.py": "def f(a, gone=0):\n    return a\n",
+        f"{PKG}/other.py": "def f(a, gone=0):\n    return a\ndef _b(x):\n    return x\n",
         "scripts/m_cli.py": f"from {PKG}.m import f\nf(0, folded=1)\n",
     }
     _, _, unknown = _scan(planted)

@@ -1971,7 +1971,9 @@ def _quality_score_sql() -> str:
     )
 
 
-_LANG_ID_SQL = (
+#: DuckDB twin of :func:`doc_lang_id`, the lang-ID leg of the entry
+#: module's ``doc_text_panel``
+LANG_ID_SQL = (
     f"SELECT lang, {ltx.lang_id_sql()} AS lang_pred, count(*) AS n "
     "FROM documents GROUP BY 1, 2 ORDER BY lang, lang_pred"
 )
