@@ -186,6 +186,21 @@ def _q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _q_join_left_outer_zero(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Left outer join — customers whose order count is zero."""
+    orders = load_table(spark, sf_dir, "orders").withColumnRenamed(
+        "o_custkey", "c_custkey"
+    )
+    customer = load_table(spark, sf_dir, "customer")
+    return (
+        customer.join(orders, on="c_custkey", how="left")
+        .groupBy("c_custkey", "c_mktsegment")
+        .agg(F.count("o_orderkey").alias("__n"))
+        .filter(F.col("__n") == 0)
+        .select("c_custkey", "c_mktsegment")
+    )
+
+
 def _q_distinct_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — select(k).distinct() (reference scripts/glue_job.py:81-82)."""
     orders = load_table(spark, sf_dir, "orders")
@@ -246,21 +261,11 @@ def _q_join_variants_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     without orders'), and the semi branch is their complement — one
     driver row verifies the three join variants and their mutual
     consistency."""
-    orders = load_table(spark, sf_dir, "orders").withColumnRenamed(
-        "o_custkey", "c_custkey"
-    )
-    customer = load_table(spark, sf_dir, "customer")
-    lo = (
-        customer.join(orders, on="c_custkey", how="left")
-        .groupBy("c_custkey", "c_mktsegment")
-        .agg(F.count("o_orderkey").alias("__n"))
-        .filter(F.col("__n") == 0)
-    )
     return stack_legs(
         {
             "semi": _q_join_semi(spark, sf_dir),
             "anti": _q_join_anti(spark, sf_dir),
-            "left_outer_zero": lo,
+            "left_outer_zero": _q_join_left_outer_zero(spark, sf_dir),
         },
         ["c_custkey", "c_mktsegment"],
     )

@@ -27,7 +27,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES
 
@@ -61,6 +61,7 @@ ENTRIES = [
     "doc_token_counts",
     "doc_token_chunks",
     "doc_chunk_dedup",
+    "doc_lang_id",
     "doc_profile",
     "doc_text_panel",
     "doc_repetition_profile",
@@ -142,11 +143,9 @@ def duck(dirty_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_dirty_text(spark, dirty_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, dirty_dir, queries[name], oracles[name]
+            name, spark, duck, dirty_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

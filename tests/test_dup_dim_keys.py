@@ -25,7 +25,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES
 
@@ -41,6 +41,9 @@ ENTRIES = [
     "master_table",
     "join_inner_chain",
     "join_variants_panel",
+    "join_left_outer_zero_orders",
+    "join_semi",
+    "join_anti",
     "salted_join_segments",
     "set_ops_panel",
     "dq_constraints_panel",
@@ -48,6 +51,7 @@ ENTRIES = [
     "dashboard_metrics_panel",
     "dashboard_top_nations",
     "sql_revenue_by_nation",
+    "stream_static_enrich",
     "stream_joins_panel",
     "flagship_category_distribution",
 ]
@@ -95,11 +99,9 @@ def duck(dup_dim_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_dup_dim_keys(spark, dup_dim_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, dup_dim_dir, queries[name], oracles[name]
+            name, spark, duck, dup_dim_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

@@ -32,7 +32,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES
 
@@ -52,6 +52,7 @@ ENTRIES = [
     "na_drop",
     "dashboard_yearly_trend",
     "dashboard_day_of_week",
+    "dashboard_most_active_day",
     "window_trend_panel",
     "dashboard_pivot_priority",
     "dashboard_tiles",
@@ -103,11 +104,9 @@ def duck(dates_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_extreme_dates(spark, dates_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, dates_dir, queries[name], oracles[name]
+            name, spark, duck, dates_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

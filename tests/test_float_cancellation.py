@@ -36,7 +36,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.functions.columns import finite_value
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES, load_table
@@ -44,6 +44,7 @@ from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers
 ENTRIES = [
     "events_stats_profile",
     "events_value_mad",
+    "events_value_histogram",
     "events_time_decay_profile",
     "events_ohlc_bars",
     "events_anomaly_profile",
@@ -99,11 +100,9 @@ def duck(spikes_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_magnitude_spikes(spark, spikes_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, spikes_dir, queries[name], oracles[name]
+            name, spark, duck, spikes_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

@@ -33,6 +33,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES, load_table
 
@@ -48,6 +49,9 @@ EDGES = [
 ]
 
 ENTRIES = [
+    "csv_ingest_roundtrip",
+    "json_ingest_roundtrip",
+    "orc_ingest_roundtrip",
     "ingest_roundtrip_panel",
 ]
 
@@ -122,11 +126,9 @@ def duck(quoting_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_quoting_edges(spark, quoting_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, quoting_dir, queries[name], oracles[name]
+            name, spark, duck, quoting_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

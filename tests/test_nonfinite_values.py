@@ -23,7 +23,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES
 
@@ -43,6 +43,7 @@ ENTRIES = [
     "corpus_semantic_dedup",
     "events_stats_profile",
     "events_value_mad",
+    "events_value_histogram",
     "events_analytics_panel",
     "dashboard_tiles",
     "cdc_latest_state",
@@ -109,11 +110,9 @@ def duck(nonfinite_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_nonfinite_values(spark, nonfinite_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, nonfinite_dir, queries[name], oracles[name]
+            name, spark, duck, nonfinite_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

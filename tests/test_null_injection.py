@@ -24,7 +24,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES
 
@@ -156,7 +156,9 @@ ENTRIES = [
     "events_transition_matrix",
     "events_cohort_retention",
     "events_funnel_steps",
+    "events_value_histogram",
     "events_hourly_gapfill",
+    "dashboard_most_active_day",
     "dashboard_tiles",
     # fourth wave: sessionization/range joins under NULL ts/user_id,
     # format round-trips under NULL payloads (JSON/CSV null fidelity),
@@ -168,8 +170,10 @@ ENTRIES = [
     "ingest_roundtrip_panel",
     "master_table_partitioned_roundtrip",
     "stream_windows_panel",
+    "doc_lang_id",
     "doc_token_chunks",
     "doc_token_counts",
+    "doc_shingle_top10",
     # fifth wave: NULL embedding vectors through the vector family and
     # NULL props through JSON extraction
     "vec_cosine_near_dup_pinned",
@@ -210,6 +214,7 @@ ENTRIES = [
     "vec_ivf_index_search",
     "doc_near_dup_removal",
     "dashboard_yearly_trend",
+    "dashboard_price_quantiles",
     "sql_priority_share",
     "filter_pushdown",
     # ninth wave (r9): the round's new operators — winnowing under
@@ -321,11 +326,9 @@ def duck(nulls_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_injected_nulls(spark, nulls_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, nulls_dir, queries[name], oracles[name]
+            name, spark, duck, nulls_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

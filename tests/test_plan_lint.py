@@ -23,6 +23,7 @@ import pytest
 from pyspark.sql import types as T
 
 import __spark_entry__ as entrymod
+import panel_legs
 
 #: Streaming entries execute on construction (availableNow run) — their
 #: plan shape is covered by tests/test_streaming.py instead.
@@ -128,12 +129,14 @@ _BNLJ_OK = {
     "vec_ann_recall_profile_pq",
 }
 
-_QUERIES = sorted(set(entrymod.queries()) - _STREAMING)
+#: the registered entries and the panel legs tests/panel_legs.py
+#: names — a leg is linted without its panel's whitelist entries
+_QUERIES = sorted((set(entrymod.queries()) | set(panel_legs.LEGS)) - _STREAMING)
 
 
 @pytest.mark.parametrize("name", _QUERIES)
 def test_no_pathological_operators(spark, smoke_dir, name):
-    df = entrymod.queries()[name](spark, smoke_dir)
+    df = panel_legs.builder(name)(spark, smoke_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: unbounded cartesian"
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
@@ -232,7 +235,7 @@ def test_unpartitioned_windows_are_bounded(spark, smoke_dir, name):
     its subtree) or be whitelisted with its bound documented — the r10
     verdict's lint gap: a future UNBOUNDED global window sailed through
     as a log warning."""
-    df = entrymod.queries()[name](spark, smoke_dir)
+    df = panel_legs.builder(name)(spark, smoke_dir)
     plan = df._jdf.queryExecution().executedPlan()
     offenders = []
     for node in _iter_plan_nodes(plan):

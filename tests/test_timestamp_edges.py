@@ -28,7 +28,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
+import panel_legs
 from yelp_review_data_analysis_using_big_data_technologies_spark.llm.staging import release_staging
 from yelp_review_data_analysis_using_big_data_technologies_spark.sources.readers import TABLES
 
@@ -41,6 +41,7 @@ ENTRIES = [
     "stream_windows_panel",
     "stream_joins_panel",
     "stream_incremental_matview",
+    "stream_static_enrich",
     "events_sessionize",
     "events_range_join_sessions",
     "events_asof_join",
@@ -105,11 +106,9 @@ def duck(ts_edges_dir):
 
 @pytest.mark.parametrize("name", ENTRIES)
 def test_twin_agrees_under_timestamp_edges(spark, ts_edges_dir, duck, name, check):
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     try:
         problems = check.compare(
-            name, spark, duck, ts_edges_dir, queries[name], oracles[name]
+            name, spark, duck, ts_edges_dir, panel_legs.builder(name), panel_legs.twin(name)
         )
     finally:
         release_staging()

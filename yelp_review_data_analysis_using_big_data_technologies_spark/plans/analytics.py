@@ -156,6 +156,33 @@ def rollup_slicers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def cube_slicers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q9b — CUBE variant: every slicer combination incl. per-status
+    margins the rollup lacks."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return lineitem.cube("l_returnflag", "l_linestatus").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
+    )
+
+
+def grouping_sets_slicers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q9c — explicit GROUPING SETS: exactly the slicer combinations
+    the dashboard needs ((flag,status), (flag), ()) without paying for
+    the per-status margin CUBE would also compute.  At scale the
+    grouping-set list IS the cost model: one partial-agg pass expands
+    each input row once per set, so pruning sets prunes shuffle."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    return lineitem.groupingSets(
+        [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
+        "l_returnflag",
+        "l_linestatus",
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
+    )
+
+
 def dashboard_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1+Q2+Q5b panel — the dashboard's scalar tiles (totals, averages,
     most-active-day argmax) as ONE single-row frame.  The totals and
@@ -197,23 +224,11 @@ def slicer_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     All three compile to a single expand+partial-agg pass each; the
     panel verifies the three grouping-analytics paths in one
     driver-checked result."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-
-    def aggs() -> list:
-        return [
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-        ]
-
     return stack_legs(
         {
             "rollup": rollup_slicers(spark, sf_dir),
-            "cube": lineitem.cube("l_returnflag", "l_linestatus").agg(*aggs()),
-            "grouping_sets": lineitem.groupingSets(
-                [["l_returnflag", "l_linestatus"], ["l_returnflag"], []],
-                "l_returnflag",
-                "l_linestatus",
-            ).agg(*aggs()),
+            "cube": cube_slicers(spark, sf_dir),
+            "grouping_sets": grouping_sets_slicers(spark, sf_dir),
         },
         ["l_returnflag", "l_linestatus", "n", "sum_price"],
     )
